@@ -242,36 +242,17 @@ object Bench {
                         ratio: Double = -1.0)
 
   /** The scaling-cert gate: names whose recorded sf1/graded ratio
-    * exceeds `ceiling`. Tiered queries ([[SparkEntry.largeBenchTier]])
-    * are structurally exempt — their sf1 number prices a documented
-    * hash-sampled slice, so the ratio is a slice artifact, not a
-    * scaling certificate. `exempt` carries the adjudicated
-    * OUTPUT-growth-bound family: queries whose result itself grows
-    * faster than the input under fact scaling (clone-pair emitters —
-    * more clones means quadratically more TRUE near-dup pairs to
-    * return), where a big ratio is the correct answer, not a defect. */
-  def scalingViolations(hist: Map[String, Cert], ceiling: Double,
-                        exempt: Set[String]): Seq[String] = {
-    val tiered = SparkEntry.largeBenchTier.keySet // built once, not per entry
+    * exceeds `ceiling`. Tiered specs are structurally exempt — their sf1
+    * number prices a documented hash-sampled slice, so the ratio is a
+    * slice artifact, not a scaling certificate — and so are the
+    * adjudicated [[QuerySpec.outputGrowthBound]] specs, where a big ratio
+    * is the correct answer, not a defect. */
+  def scalingViolations(hist: Map[String, Cert],
+                        ceiling: Double): Seq[String] =
     hist.toSeq.collect {
-      case (n, c) if c.ratio > ceiling && !exempt.contains(n) &&
-        !tiered.contains(n) => n
+      case (n, c) if c.ratio > ceiling && !SparkEntry.specs.get(n)
+        .exists(q => q.tier.nonEmpty || q.outputGrowthBound) => n
     }.sorted
-  }
-
-  /** Adjudicated output-growth-bound exemptions for the scaling pin
-    * (see [[scalingViolations]]): the near-dup PAIR/cluster emitters,
-    * whose sf1 output is itself superlinear in the fact scale because
-    * ScaleUp's clone families grow quadratically many true pairs. */
-  val scalingExempt: Set[String] = Set(
-    "q37_dedup_minhash_lsh", "q39_dedup_minhash_fast",
-    "q54_dedup_clusters", "q75_dedup_keep_best", "q108_clusters_incr",
-    // q320 = map-side translit normalization in FRONT of the q37 banded
-    // pipeline: its output is the same clone-family pair class as
-    // q37/q39 (quadratic true-pair growth under ScaleUp), so its honest
-    // sf1/graded ratio grows with SF — the r12 judge measured ~5.6 and
-    // adjudicated it into this output-growth-bound family
-    "q320_translit_neardup")
 
   /** Execution order for the sf1-class pass: least-recently-certified
     * first (never-certified queries lead), projected-cheapest first
@@ -409,14 +390,44 @@ object Bench {
         // query recorded an entry) are emitted — the static registry
         // would mis-normalize a pass that skipped or full-sized a query.
         val tiers = tierApplied.sorted
-          .map(nm =>
-            s""""$nm":${SparkEntry.largeBenchTierSlice.getOrElse(nm, 1)}""")
+          .map(nm => s""""$nm":${tierSlice(nm)}""")
           .mkString("{", ",", "}")
         s""","total_large":$t,"large_n":$n,"large_skipped_n":$sk""" +
           s""","large_tiered":$tiers"""
       }.getOrElse("") +
       s""","budget_s":$budgetS,"elapsed_s":$elapsedS""" +
       s""","full":".bench/last${if (filtered) "_filtered" else ""}_run.json"}"""
+
+  /** Slice denominator of a query's sf1-class tier: the "1/N" emitted next
+    * to its name (`large_tiered: {name: N}`) so cross-round dashboards
+    * summing `total_large` can normalize when a tier notches; 1 when the
+    * query has no tier. */
+  def tierSlice(name: String): Int =
+    SparkEntry.specs.get(name).flatMap(_.tier).map(_.n).getOrElse(1)
+
+  /** The chunked per-query record: a capture that keeps only a
+    * ~2000-char stdout TAIL cannot parse the ~15 KB contract line for 322
+    * queries. Each chunk is a complete, independently parseable JSON
+    * object in the contract shape carrying a SLICE of the graded map
+    * (values rounded to 1 ms; full precision lives in the main line and
+    * .bench/last_run.json) plus the run's `graded_passes` and `errors_n`,
+    * so any suffix of the output still yields per-query data and the
+    * summary fields. */
+  def chunkLines(times: collection.Map[String, Double], names: Seq[String],
+                 sfDir: String, gradedPasses: Int,
+                 errorsN: Int): Seq[String] = {
+    val groups = names.filter(times.contains).grouped(8).toSeq
+    val total = times.values.sum
+    groups.zipWithIndex.map { case (grp, i) =>
+      val qs = grp.map(n =>
+          s""""$n":${math.rint(times(n) * 1000) / 1000}""")
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":$total,"unit":"sec"""" +
+        s""","sf":"$sfDir","chunk":${i + 1},"chunks":${groups.size}""" +
+        s""","graded_passes":$gradedPasses,"errors_n":$errorsN""" +
+        s""","queries":$qs}"""
+    }
+  }
 
   /** Whether the budget affords another graded pass (projected at ~0.85x
     * pass 1, the observed warm ratio). Deliberately does NOT reserve
@@ -451,16 +462,7 @@ object Bench {
     val tStart = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - tStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create("graft-bench")
     // Self-imposed wall-clock budget for the WHOLE run. The driver wraps
     // the bench in its own hard timeout (round 6 hit it: rc=124, no JSON
     // at all); finishing under a conservative internal budget is what
@@ -497,8 +499,8 @@ object Bench {
     // indexes/codebooks) run untimed too: in a single-pass run the build
     // otherwise lands inside pass 1's timing (round 10 recorded q52 at
     // 5.8 s cold vs 0.9 s warm — the bucket WRITE, not the join)
-    for (w <- "q52_join_bucketed" +: SparkEntry.largeIndexWarm
-         if filter.isEmpty || names.contains(w))
+    val warm = names.filter(SparkEntry.specs(_).warmIndex)
+    for (w <- warm)
       try SparkEntry.queries(w)(spark, sfDir).count()
       catch { case _: Throwable => () }
 
@@ -569,7 +571,7 @@ object Bench {
               col("l_orderkey") === col("o_orderkey"))
             .groupBy(col("o_orderpriority")).agg(count(lit(1))).count()
         }
-        // same ts normalization as SparkEntry.t: nanos-as-long or NTZ
+        // same ts normalization as SparkHelpers.t: nanos-as-long or NTZ
         val evRaw = spark.read.parquet(s"$sfDir/events.parquet")
         val ev = evRaw.schema("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>
@@ -622,30 +624,31 @@ object Bench {
     // indexes/codebooks) untimed so the timed body of the incremental
     // family measures its operating cost, which is exactly what min-of-2
     // passes gave when the budget allowed two. The exact-audit ceilings
-    // run their documented bench tier (SparkEntry.largeBenchTier,
-    // identical plan over a hash-sampled slice). An abort or
+    // run their documented bench tier (QuerySpec.tier: the graded body
+    // over a hash-sampled slice). An abort or
     // projected-cost skip keeps every entry already recorded and reports
     // large_complete=false plus the skipped names.
     val lt = mutable.Map[String, Double]()
     val gcfLarge = mutable.Map[String, Double]()
+    // only tiers genuinely applied (query recorded this pass): a skipped
+    // tiered query's denominator must not ride the record
+    def tiersApplied: Seq[String] =
+      names.filter(n => SparkEntry.specs(n).tier.nonEmpty && lt.contains(n))
     val large =
       if (!haveLarge) ""
       else try {
         val (histRun, hist) = readHistory()
         val largeEst = largeEstimate(hist, times.get, largeFactor) _
         val ordered = largeOrder(names, hist, largeEst)
-        // untimed warm-up, deadline-aware: bucketed fact tables first,
-        // then the persisted-index builders
-        for (w <- "q52_join_bucketed" +: SparkEntry.largeIndexWarm
-             if filter.isEmpty || names.contains(w))
+        // untimed warm-up, deadline-aware: bucketed fact tables and the
+        // persisted-index builders
+        for (w <- warm)
           if (System.nanoTime() < deadlineNanos &&
               !spark.sparkContext.isStopped)
             try SparkEntry.queries(w)(spark, largeDir).count()
             catch { case _: Throwable => () }
         val lerrors = mutable.Map[String, String]()
-        val tier = SparkEntry.largeBenchTier
-        val lq = names.map(n =>
-          n -> tier.getOrElse(n, SparkEntry.queries(n))).toMap
+        val lq = names.map(n => n -> SparkEntry.specs(n).tierBody).toMap
         // every RECORDED entry is a warm back-to-back min-of-2: these
         // stamps steer future tier/notch decisions from the git-tracked
         // history, and round 11 proved a single pass at the contended
@@ -696,9 +699,7 @@ object Bench {
         if (filter.isEmpty)
           writeHistory(histRun + 1, stamped(histRun + 1))
         val skipped = names.filter(n => !lt.contains(n))
-        // only tiers genuinely applied (query recorded this pass): a
-        // skipped tiered query's denominator must not ride the record
-        val tiered = names.filter(n => tier.contains(n) && lt.contains(n))
+        val tiered = tiersApplied
         s""","sf_large":"$largeDir","total_large":${lt.values.sum}""" +
           s""","large_complete":${complete && lerrors.isEmpty}""" +
           (if (skipped.nonEmpty)
@@ -707,8 +708,7 @@ object Bench {
           (if (tiered.nonEmpty)
             // {name: slice denominator} so round-over-round total_large
             // stays normalizable when a tier notches (e.g. 1/4 -> 1/8)
-            tiered.map(n =>
-                s"${jstr(n)}:${SparkEntry.largeBenchTierSlice.getOrElse(n, 1)}")
+            tiered.map(n => s"${jstr(n)}:${tierSlice(n)}")
               .mkString(""","large_tiered":{""", ",", "}")
           else "") +
           (if (lerrors.nonEmpty) s""","errors_large":${emap(lerrors)}"""
@@ -731,35 +731,16 @@ object Bench {
     val line = gradedLine(probe + large)
     println(line)
     writeTwin(line, filter.nonEmpty)
-    // Chunked per-query record (round-14 bench-output contract fix): the
-    // driver's artifact keeps only a ~2000-char stdout TAIL, and the full
-    // contract line above is ~15 KB for 322 queries — so every
-    // BENCH_r*.json through r13 carried parsed:null and the per-query
-    // round-over-round comparison never happened. Each chunk below is a
-    // complete, independently parseable JSON object in the contract
-    // shape carrying a SLICE of the graded map (values rounded to 1 ms;
-    // full precision lives in the main line and .bench/last_run.json),
-    // so any suffix of the output still yields per-query data. The
-    // <500-byte totals summary stays the LAST line.
-    val chunkNames = names.filter(times.contains)
-    val chunkGroups = chunkNames.grouped(8).toSeq
-    val chunkTotal = times.values.sum
-    for ((grp, i) <- chunkGroups.zipWithIndex) {
-      val qs = grp.map(n =>
-          s""""$n":${math.rint(times(n) * 1000) / 1000}""")
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"total","value":$chunkTotal,"unit":"sec"""" +
-        s""","sf":"$sfDir","chunk":${i + 1},"chunks":${chunkGroups.size}""" +
-        s""","queries":$qs}""")
-    }
+    // the <500-byte totals summary stays the LAST line
+    chunkLines(times, names, sfDir, gradedPasses, errors.size)
+      .foreach(println)
     println(summaryLine(times.values.sum, sfDir, gradedPasses,
       times.size, errors.size,
       if (large.isEmpty) None
       else Some((lt.values.sum, lt.size,
         names.count(n => !lt.contains(n)))),
       budgetS, elapsedS, filtered = filter.nonEmpty,
-      tierApplied = names.filter(n =>
-        SparkEntry.largeBenchTier.contains(n) && lt.contains(n))))
+      tierApplied = tiersApplied))
     spark.stop()
   }
 }

@@ -31,20 +31,11 @@ object Main {
     def need(k: String) = kv.getOrElse(k,
       throw new IllegalArgumentException(s"missing config key $k"))
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // embedding-safe: getOrCreate may hand us a caller's session — only
     // stop what this main itself created
     val preExisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create("graft")
 
     val source = kv.getOrElse("Source", "fixture") match {
       case "dsv2" => new Dsv2ExportSource(spark, need("FixturePath"))

@@ -1,13 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create("graft-plan-dump")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     for (q <- args(0).split(",")) {
       // the judge-checkable artifact format (optimization guide §7.2)

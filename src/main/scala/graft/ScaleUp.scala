@@ -69,15 +69,7 @@ object ScaleUp {
     val dest = sys.env.getOrElse("SPARK_GRAFT_SCALEUP_DEST",
       "/root/repo/.bench/sf1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALEUP_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create("graft-scaleup")
     run(spark, src, dest, factor)
     println(s"""{"scaleup":"$dest","factor":$factor,"src":"$src"}""")
     spark.stop()

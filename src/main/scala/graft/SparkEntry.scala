@@ -1,12 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.functions.GraftFunctions
-import graft.operators.{Bpe, Dedup, Multimodal, Sampling, Sessionize, Similarity, TextAnalysis}
-import graft.schema.ExportSchema
-import graft.transform.{ExportTransform, ValueFormat}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -17,18354 +11,23 @@ import graft.transform.{ExportTransform, ValueFormat}
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts arrives in whatever physical type the generator chose for
-    // this round — TIMESTAMP(NANOS) (Spark reads it only as a long, via
-    // spark.sql.legacy.parquet.nanosAsLong) or TIMESTAMP(MICROS) without
-    // the UTC flag (Spark reads TIMESTAMP_NTZ). Normalize both to the
-    // session-UTC TimestampType DuckDB produces, so every downstream
-    // epoch cast / window / interval op sees one type across rounds.
-    if (name == "events") {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/$name.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts",
-            col("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case _ => raw
-      }
-    } else s.read.parquet(s"$dir/$name.parquet")
-  }
+  /** Every query of the suite, one [[QuerySpec]] each, by name. */
+  lazy val specs: Map[String, QuerySpec] = QuerySpec.index(Seq(
+    registry.RelationalQueries.specs, registry.TimeSeriesQueries.specs,
+    registry.TextAnalysisQueries.specs, registry.DedupQueries.specs,
+    registry.SimilarityQueries.specs, registry.MultimodalQueries.specs,
+    registry.StatsQueries.specs, registry.GraphQueries.specs).flatten)
 
-  /** The shared fact-fact join+agg body of q52/q53 (SMJ forced so the
-    * variants differ ONLY in whether the join input partitioning comes
-    * from bucket layout or a per-query shuffle). */
-  private def factJoinAgg(li: DataFrame, o: DataFrame): DataFrame =
-    li.join(o.hint("merge"), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderpriority"))
-      .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .as("revenue"),
-        count(lit(1)).as("n"))
-      .orderBy(col("o_orderpriority"))
+  /** Each query's Spark body, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map { case (n, q) => n -> q.body }
 
-  /** Bucketed persisted copies of lineitem/orders, keyed by the join key
-    * with matching bucket counts (the BucketingSpec layout applied to the
-    * bench tables). Written once per (warehouse, sf dir); later runs —
-    * including the bench's best-of-N second pass — reuse the files. */
-  private def bucketedFacts(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val specs = Seq(
-      (s"li_bkt_$tag", "lineitem", "l_orderkey"),
-      (s"o_bkt_$tag", "orders", "o_orderkey"))
-    specs.foreach { case (nm, src, key) =>
-      if (!s.catalog.tableExists(nm)) {
-        // the in-memory catalog forgets tables across JVMs: clear any
-        // stale directory, then (re)write the bucketed table
-        val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
-          .getPath
-        val p = new org.apache.hadoop.fs.Path(wh, nm)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        t(s, dir, src).write.bucketBy(32, key).sortBy(key)
-          .mode("overwrite").saveAsTable(nm)
-      }
-    }
-    (s.table(specs(0)._1), s.table(specs(1)._1))
-  }
-
-  /** sum(CAST(c AS DECIMAL(38,6))) cast back to double — the engine-portable
-    * exact sum. */
-  private def dsum(c: Column): Column =
-    sum(c.cast("decimal(38,6)")).cast("double")
-
-  /** The PQ codebook for a corpus dir — a persisted model artifact, trained
-    * once (the q70 pattern: a real pipeline has yesterday's model on disk);
-    * q72 and q77 share it, so the timed query bodies pay encode + ADC scan
-    * + recall check, never training. */
-  private def pqCodebookFor(s: SparkSession, dir: String,
-                            emb: DataFrame): Array[Array[Array[Float]]] = {
-    // cache key = md5 of the absolute path (collision-resistant, unlike
-    // the 32-bit String.hashCode), and a sidecar row-count fingerprint
-    // guards validity: regenerated data under the same dir retrains
-    // instead of silently reusing a stale codebook (which would surface
-    // only as a confusing recall-gate failure)
-    val cbDir = new java.io.File(
-      s".bench/q72_cb_${corpusKey(dir)}").getAbsolutePath
-    val nRows = emb.count()
-    val metaFile = new java.io.File(s"$cbDir.rows")
-    val cacheValid = new java.io.File(s"$cbDir/_SUCCESS").exists() &&
-      metaFile.exists() &&
-      scala.util.Try(new String(java.nio.file.Files
-        .readAllBytes(metaFile.toPath), "UTF-8").trim.toLong)
-        .toOption.contains(nRows)
-    if (cacheValid) {
-      s.read.parquet(cbDir).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-        .groupBy(_._1).toArray.sortBy(_._1)
-        .map(_._2.sortBy(_._2).map(_._3))
-    } else {
-      val trained =
-        Similarity.trainPqCodebooks(emb, m = 8, ksub = 32, iters = 3)
-      val sess = s; import sess.implicits._
-      trained.zipWithIndex.flatMap { case (cbj, j) =>
-        cbj.zipWithIndex.map { case (v, c) => (j, c, v.toSeq) }
-      }.toSeq.toDF("j", "c", "vec")
-        .withColumn("vec", col("vec").cast("array<float>"))
-        .coalesce(1).write.mode("overwrite").parquet(cbDir)
-      java.nio.file.Files.write(metaFile.toPath,
-        nRows.toString.getBytes("UTF-8"))
-      trained
-    }
-  }
-
-  /** Trained quality-classifier weights for a corpus dir — the same
-    * persisted-model-artifact contract as [[pqCodebookFor]]: a real
-    * pipeline trains the filter once and audits/scoring reuse it, so
-    * the timed bodies of q91/q166 pay scoring (and q166's calibration
-    * bins), not the T-scan GD train. Row-count fingerprint guards
-    * staleness; full-precision doubles round-trip via
-    * `java.lang.Double.toString` (shortest-exact). */
-  private def logRegWeightsFor(s: SparkSession, dir: String,
-                               docs: DataFrame,
-                               label: org.apache.spark.sql.Column,
-                               iters: Int, eta: Double): Array[Double] = {
-    val f = new java.io.File(
-      s".bench/q91_w_${corpusKey(dir)}_$iters").getAbsoluteFile
-    val nRows = docs.count()
-    val cached = scala.util.Try {
-      val lines = new String(java.nio.file.Files.readAllBytes(f.toPath),
-        "UTF-8").trim.split("\n")
-      require(lines(0).toLong == nRows)
-      lines(1).split(",").map(_.toDouble)
-    }.toOption
-    cached.getOrElse {
-      val w = operators.QualityClassifier.trainLogReg(docs, "text",
-        label, iters = iters, eta = eta)
-      f.getParentFile.mkdirs()
-      java.nio.file.Files.write(f.toPath,
-        (nRows.toString + "\n" + w.map(_.toString).mkString(","))
-          .getBytes("UTF-8"))
-      w
-    }
-  }
-
-  /** The messy-URL fixture column (q113/q120): per doc_id, one of four
-    * fetch-URL variants of the same canonical page (explicit default
-    * port, upper-case scheme+host+trailing slash, utm tracking params,
-    * fragment) — groups of 4 consecutive ids share a canonical, hosts
-    * cycle over 20 sites, a real `?page=` param survives
-    * canonicalization. The oracle predicts canonical/host/domain
-    * arithmetically from this derivation; Spark must recover them
-    * through the real parser. */
-  private def messyUrlCol: org.apache.spark.sql.Column = {
-    val g = expr("doc_id div 4")
-    val base = concat(lit("www.site"), (g % 20).cast("string"),
-      lit(".example.com"))
-    val pageQ = concat(lit("?page="), (g % 3).cast("string"))
-    when(col("doc_id") % 4 === 0,
-        concat(lit("https://"), base, lit(":443/docs/"),
-          g.cast("string"), pageQ))
-      .when(col("doc_id") % 4 === 1,
-        concat(lit("HTTPS://"), upper(base), lit("/docs/"),
-          g.cast("string"), lit("/"), pageQ))
-      .when(col("doc_id") % 4 === 2,
-        concat(lit("https://"), base, lit("/docs/"), g.cast("string"),
-          lit("?utm_source=feed&page="), (g % 3).cast("string"),
-          lit("&utm_campaign=c")))
-      .otherwise(
-        concat(lit("https://"), base, lit("/docs/"), g.cast("string"),
-          pageQ, lit("#sec-2")))
-  }
-
-  /** Collision-resistant per-corpus key for `.bench` artifact dirs — md5 of
-    * the absolute path (String.hashCode is 32-bit and collides across real
-    * corpus paths). */
-  private def corpusKey(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(16)
-  }
-
-  /** Build-or-reuse a persisted parquet index artifact. A row-count sidecar
-    * guards staleness: regenerated data under the same dir rebuilds the
-    * index instead of silently searching a stale one (which would surface
-    * only as a confusing recall/oracle failure). Returns the parquet path
-    * of the materialized index. */
-  private def ensurePersistedIndex(idxDir: String, nRows: Long)
-                                  (build: => DataFrame): String = {
-    val idxPath = s"$idxDir/mat_0"
-    val metaFile = new java.io.File(s"$idxDir.rows")
-    val valid = new java.io.File(s"$idxPath/_SUCCESS").exists() &&
-      metaFile.exists() &&
-      scala.util.Try(new String(java.nio.file.Files
-        .readAllBytes(metaFile.toPath), "UTF-8").trim.toLong)
-        .toOption.contains(nRows)
-    if (!valid) {
-      graft.operators.Materializer.Persisted(idxDir)(build)
-      java.nio.file.Files.write(metaFile.toPath,
-        nRows.toString.getBytes("UTF-8"))
-    }
-    idxPath
-  }
-
-  /** Shared builder of the q300/q303 funnel survivorship table:
-    * (doc_id, ntk, c1..c7) — c_k = survived stages 1..k (gates, exact
-    * dedup keep-min, near-dup drop, decontamination, langid, quality).
-    * Stage flags are computed once per doc on the full corpus. */
-  private def funnelCum(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
-    val d = t(s, dir, "documents")
-    val tk = operators.TextAnalysis.tokens(col("text"))
-    val flags0 = d.select(col("doc_id"),
-      (length(col("text")) >= 200 &&
-        when(length(col("text")) > 0,
-          length(regexp_replace(col("text"), "[^A-Za-z]", "")) * 10
-            >= length(col("text")) * 6).otherwise(false) &&
-        size(tk) >= 30).as("f_gates"),
-      size(tk).cast("long").as("ntk"),
-      (operators.TextAnalysis.langId(col("text")) === "en")
-        .as("f_lang"),
-      (round(operators.TextAnalysis.qualityScore(col("text")), 6)
-        >= 0.3).as("f_qual"),
-      md5(col("text")).as("k"))
-    val wk = d.groupBy(md5(col("text")).as("k"))
-      .agg(min(col("doc_id")).as("keep"))
-    val nd = Dedup.minhashLshPairs(d, "doc_id", "text", k = 16,
-        bands = 4, shingleN = 3, threshold = 0.5, fast = false)
-      .select(col("b_id")).distinct()
-    val ov = TextAnalysis.contaminationOverlap(d,
-        d.filter(col("doc_id") < 10), "doc_id", "text", n = 5)
-      .select(col("id").as("doc_id"), col("n_overlap"))
-    val cum = flags0.join(wk, Seq("k"))
-      .join(nd, col("doc_id") === col("b_id"), "left")
-      .join(ov, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("ntk"),
-        lit(true).as("c1"),
-        col("f_gates").as("c2"),
-        (col("f_gates") && col("doc_id") === col("keep")).as("c3"),
-        (col("f_gates") && col("doc_id") === col("keep")
-          && col("b_id").isNull).as("c4"),
-        (col("f_gates") && col("doc_id") === col("keep")
-          && col("b_id").isNull && col("doc_id") >= 10
-          && coalesce(col("n_overlap"), lit(0L)) === 0).as("c5"),
-        (col("f_gates") && col("doc_id") === col("keep")
-          && col("b_id").isNull && col("doc_id") >= 10
-          && coalesce(col("n_overlap"), lit(0L)) === 0
-          && col("f_lang")).as("c6"),
-        (col("f_gates") && col("doc_id") === col("keep")
-          && col("b_id").isNull && col("doc_id") >= 10
-          && coalesce(col("n_overlap"), lit(0L)) === 0
-          && col("f_lang") && col("f_qual")).as("c7"))
-    cum
-  }
-
-  /** Spark twin of the oracle's `orderGridCtes`: the synopsis family's
-    * shared input — order totals in cents, value histogram (ONE corpus
-    * exchange), 32-point equi-rank grid via exact integer rank
-    * thresholds, dense (t, f) frequency sequence. Returns
-    * (grid (t, gv), freqs (t, f)); both bounded, both checkpointed. */
-  private[graft] def orderGridFreqs(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    operators.Stats.equiRankGridFreqs(
-      t(s, dir, "orders")
-        .select((col("o_totalprice") * 100).cast("long").as("v"))
-        .groupBy(col("v")).agg(count(lit(1)).as("c")),
-      g = 32)
-
-  /** Deterministic hash-sample: keep rows whose key xxhash64 lands in
-    * residue 0 of `mod` — the engine-portable corpus slice the sf1-class
-    * bench tier uses for the super-linear exact-audit queries. */
-  private def hashSample(df: DataFrame, keyCol: String, mod: Int): DataFrame =
-    df.filter(pmod(xxhash64(col(keyCol)), lit(mod)) === 0)
-
-  /** q315's blocklist — lowercase phrases over the corpus vocabulary,
-    * including two ABSENT ones (exact zeros are part of the contract)
-    * and a nested pair ("fast" / "fast fast") that exercises the
-    * automaton's suffix-output links. Shared by the query and the
-    * oracle's VALUES list. */
-  private[graft] val blocklistPatterns: Seq[String] = Seq(
-    "big big", "buy now", "click here", "fast", "fast fast",
-    "slow scan", "table", "table table")
-
-  /** q323's dictionary-scale blocklist: every trigram phrase over a
-    * fixed 15-word vocabulary (15^3 = 3375 patterns, ~18k trie nodes) —
-    * large enough to force [[graft.functions.BlocklistHits]] onto its
-    * sparse CSR representation, small enough for the oracle's
-    * replace()-per-(doc, pattern) replay to stay cheap. */
-  private[graft] val dictBlocklistVocab: Seq[String] = Seq(
-    "join", "hash", "row", "batch", "scan", "customer", "column",
-    "filter", "small", "slow", "merge", "order", "vector", "line",
-    "data")
-  private[graft] lazy val dictBlocklistPatterns: Seq[String] =
-    for {
-      a <- dictBlocklistVocab
-      b <- dictBlocklistVocab
-      c <- dictBlocklistVocab
-    } yield s"$a $b $c"
-
-  /** q325's funnel blocklist: multi-word phrases only (every doc of the
-    * word-soup corpus contains single common words, which would zero
-    * the funnel's tail). */
-  private val funnelBlocklist: Seq[String] = Seq(
-    "big big", "buy now", "click here", "fast fast", "slow scan",
-    "table table")
-
-  /** The q325 oracle's containment OR-chain, generated from the SAME
-    * Seq the Spark automaton gate consumes — the two sides cannot
-    * drift. */
-  private lazy val funnelBlocklistSql: String =
-    funnelBlocklist.map(p => s"contains(lower(a.t), '$p')")
-      .mkString("\n       OR ")
-
-  /** Oracle-side fragments shared with the Spark operators: q320's
-    * diacritic fold table (must be the identical character mapping on
-    * both sides) and q323's dictionary vocabulary as a DuckDB list
-    * literal. */
-  private lazy val translitDia = TextAnalysis.diacritics
-  private lazy val translitFold = TextAnalysis.diacriticsFolded
-  private lazy val dictVocabSql =
-    dictBlocklistVocab.map(w => s"'$w'").mkString("[", ", ", "]")
-
-  /** The support>=2 co-purchase part graph q273 walks: one edge per part
-    * pair that co-occurs in >= 2 orders. */
-  /** (pa, pb, cm) co-purchase pair supports via ONE basket aggregation:
-    * group lineitem by order (one exchange), enumerate the <=21 in-basket
-    * index pairs map-side (baskets are <=7 items, so the fan-out is
-    * bounded), then count. Replaces the orderkey SELF-JOIN shape (two
-    * lineitem scans + two join exchanges + the pair aggregate) with one
-    * scan + two exchanges — measured 2.9 s -> 1.5 s warm at sf0.1 on the
-    * bare edge build, identical pair multiset (each unordered row pair
-    * appears exactly once in both shapes; exceptAll both ways == 0). */
-  private[graft] def copurchasePairCounts(li: DataFrame): DataFrame =
-    basketPairCounts(li.select(col("l_orderkey").as("ok"),
-      col("l_partkey").as("pk")), "ok", "pk")
-
-  /** Generalized in-basket pair supports — see [[operators.Baskets]]. */
-  private[graft] def basketPairCounts(bi: DataFrame, bkCol: String,
-                                      itCol: String): DataFrame =
-    operators.Baskets.basketPairCounts(bi, bkCol, itCol)
-
-  /** The support>=2 co-purchase part graph (src < dst). */
-  private[graft] def copurchaseEdges(li: DataFrame): DataFrame =
-    copurchasePairCounts(li)
-      .filter(col("cm") >= 2)
-      .select(col("pa").as("src"), col("pb").as("dst"))
-
-  /** Brandes-Pich fixed pivot budget: the K lowest graph nodes by md5
-    * hash-rank (node tiebreak) — a deterministic uniform sample whose
-    * size is CONSTANT in the corpus, so sampled-betweenness work is
-    * K x edges (linear) at every SF. Engine-portable: DuckDB's
-    * `ORDER BY md5(CAST(node AS VARCHAR)), node LIMIT K` picks the
-    * identical set. The K-row result is bounded-by-construction
-    * (GlobalLimit), so the seed-side joins inside the BFS stay guard-
-    * clean. */
-  private def betweennessPivots(edges: DataFrame, k: Int): DataFrame =
-    edges.select(col("src").as("node"))
-      .unionAll(edges.select(col("dst").as("node"))).distinct()
-      .orderBy(md5(col("node").cast("string")), col("node"))
-      .limit(k)
-
-  /** q201's body over an arbitrary documents frame (shared by the query
-    * and its bench tier): exact all-pairs Jaccard join via the PPJoin
-    * prefix filter, J >= 1/2, recall 1.0 guaranteed. */
-  private def setJoinExactBody(s: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
-    Dedup.prefixFilterJaccardPairs(docs, "doc_id", "text",
-        shingleN = 3, thetaNum = 1, thetaDen = 2)
-      .orderBy(col("a_id"), col("b_id"))
-  }
-
-  /** q209's body over an arbitrary documents frame (shared by the query
-    * and its bench tier): MinHash-LSH precision/recall against the exact
-    * prefix-filter join as ground truth. */
-  private def lshRecallBody(s: SparkSession, docs: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
-    val exact = operators.Materializer.Local(
-      Dedup.prefixFilterJaccardPairs(docs, "doc_id", "text",
-        shingleN = 3, thetaNum = 1, thetaDen = 2)
-        .select(col("a_id"), col("b_id")))
-    val lsh = operators.Materializer.Local(
-      Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16, bands = 4,
-        shingleN = 3, threshold = 0.5, fast = false)
-        .select(col("a_id"), col("b_id")))
-    val common = exact.join(lsh, Seq("a_id", "b_id"), "left_semi")
-    exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(broadcast(lsh.agg(count(lit(1)).as("n_lsh"))))
-      .crossJoin(broadcast(common.agg(count(lit(1)).as("n_common"))))
-      .select(col("n_exact"), col("n_lsh"), col("n_common"),
-        round(col("n_common").cast("double")
-          / col("n_lsh").cast("double"), 6).as("precision"),
-        round(col("n_common").cast("double")
-          / col("n_exact").cast("double"), 6).as("recall"))
-  }
-
-  /** q263's body over an arbitrary embeddings frame (shared by the query
-    * and its bench tier): LOF (Breunig et al. 2000) with cosine distance,
-    * kNN from the exact n² top-k audit path. */
-  private def lofBody(s: SparkSession, emb: DataFrame): DataFrame = {
-    GraftFunctions.register(s)
-    val k = 10
-    val knn = operators.Materializer.Local(
-      operators.Similarity.bruteForceTopK(emb, emb, k = k,
-          exact = true, fanOutCorpus = true)
-        .select(col("query_id"), col("neighbor_id"),
-          (lit(1.0) - col("sim")).as("d"), col("rk")))
-    val kdist = knn.filter(col("rk") === k)
-      .select(col("query_id").as("neighbor_id"),
-        col("d").as("kdist"))
-    // per-point frames (kdist/lrd/nblrd are one row per vector, i.e.
-    // SF-linear) ride unhinted equi-joins: inside the accepted exact-n2
-    // audit ceiling the join strategy is not the binding cost, and a
-    // forced broadcast would be the one part that OOMs first at scale
-    val reach = knn.join(kdist, Seq("neighbor_id"))
-      .select(col("query_id"),
-        greatest(col("d"), col("kdist")).cast("decimal(9,6)")
-          .as("reach"))
-    val lrd = operators.Materializer.Local(reach
-      .groupBy(col("query_id"))
-      .agg(sum(col("reach")).as("sreach"))
-      .select(col("query_id"),
-        when(col("sreach").cast("double") > 0.0,
-          round(lit(k.toDouble) / col("sreach").cast("double"), 9))
-          .as("lrd")))
-    val nblrd = knn.join(lrd
-        .select(col("query_id").as("neighbor_id"),
-          col("lrd").as("lrd_b")), Seq("neighbor_id"))
-      .groupBy(col("query_id"))
-      .agg(sum(col("lrd_b").cast("decimal(19,9)")).as("slrd"),
-        count(col("lrd_b")).as("nb"))
-    lrd.join(nblrd, Seq("query_id"))
-      .join(kdist.select(col("neighbor_id")
-        .as("query_id"), col("kdist")), Seq("query_id"))
-      .select(col("query_id").as("vec_id"),
-        round(col("kdist"), 6).as("kdist"), col("lrd"),
-        when(col("lrd").isNotNull && col("nb") === k,
-          round(col("slrd").cast("double")
-            / (lit(k.toDouble) * col("lrd")), 6)).as("lof"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** Bench-tier variants for the sf1-class suite ONLY — never used by
-    * Verify or the correctness gate. The three exact-audit ceilings whose
-    * cost is super-linear BY DESIGN (q201/q209 exact all-pairs set joins,
-    * q263 exact n² kNN) run the IDENTICAL plan over a deterministic
-    * xxhash64 corpus slice, so the large pass prices the plan shape
-    * without the quadratic payload blowup (ScaleUp's verbatim-clone
-    * duplication grows their pair output ~100-1000×, and q201 alone was
-    * ~1/3 of round-6's large-suite wall-clock). Tiered names are reported
-    * in the bench JSON (`large_tiered`) and documented in COVERAGE.md. */
-  def largeBenchTier: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q201_setjoin_exact" -> ((s, dir) =>
-      setJoinExactBody(s, hashSample(t(s, dir, "documents"), "doc_id", 4))),
-    // q209 runs BOTH the LSH path and the exact PPJoin ground truth by
-    // definition (it is the recall-certification gate), which made it the
-    // single largest line in the round-8 large budget (54.7 s at the 1/4
-    // slice). Candidate volume is quadratic in the slice, so the 1/8
-    // notch costs ~1/4 of the 1/4 tier and frees ~25 s of budget for the
-    // certification rotation; the plan is identical and the full-size
-    // recall number stays certified at the graded sf dir.
-    "q209_lsh_recall_cert" -> ((s, dir) =>
-      lshRecallBody(s, hashSample(t(s, dir, "documents"), "doc_id", 8))),
-    "q263_lof" -> ((s, dir) =>
-      lofBody(s, hashSample(t(s, dir, "embeddings"), "vec_id", 8))),
-    // q304 is exact-verify set similarity like q201: ScaleUp's verbatim
-    // clones make every candidate bucket quadratic in the clone factor
-    // (the sf1 pair output grows ~100x), so the large tier prices the
-    // identical plan on a 1/8 doc slice (1/4 through round 7; dropped a
-    // notch to pay for the restored second graded pass — candidate
-    // volume is quadratic in the slice, so 1/8 costs ~1/4 of 1/4)
-    "q304_weighted_neardup" -> ((s, dir) => {
-      GraftFunctions.register(s) // the verify's native map_min_sum
-      Dedup.weightedMinhashPairs(
-        hashSample(t(s, dir, "documents"), "doc_id", 8), "doc_id",
-        "text", k = 8, bands = 4, thetaNum = 3, thetaDen = 5)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-    // q301 runs the exact (fast=false) MinHash pair generation PLUS the
-    // oriented wedge join — on ScaleUp's clone-quadratic sf1 graph it
-    // became the largest large-budget line (39.8 s in round 9). Same
-    // recipe as q201/q209: identical plan over a deterministic 1/4 doc
-    // slice (pair volume is quadratic in the slice, so ~1/16 the edges;
-    // wedge volume shrinks superquadratically), full-size numbers stay
-    // certified at the graded sf dir.
-    "q301_dup_transitivity" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val pairs = Dedup.minhashLshPairs(
-          hashSample(t(s, dir, "documents"), "doc_id", 4),
-          "doc_id", "text", k = 16, bands = 4, shingleN = 3,
-          threshold = 0.5, fast = false)
-        .select(col("a_id").as("src"), col("b_id").as("dst"))
-      operators.Graph.triangleStats(pairs)
-    }),
-    // q310 runs the same exact (fast=false) pair generation as
-    // q201/q301 at the LOOSEST sweep threshold — clone-quadratic pair
-    // volume on the sf1 corpus (18.1 s dry-run untiered) — so it gets
-    // the same plan-identical 1/4 slice.
-    "q310_dedup_threshold_sweep" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val pairs = Dedup.minhashLshPairs(
-        hashSample(t(s, dir, "documents"), "doc_id", 4),
-        "doc_id", "text", k = 16, bands = 4, shingleN = 3,
-        threshold = 0.3, fast = false)
-      Dedup.dedupThresholdSweep(pairs,
-        Seq(0.3, 0.4, 0.5, 0.6, 0.7, 0.8))
-    }),
-    // the remaining audit ceiling: the NN-descent build-quality readout
-    // runs on a half corpus slice, identical per-round plan, full-size
-    // numbers stay certified at the graded sf dir. (q273 left the tier
-    // table in round 11: its fixed Brandes-Pich pivot budget made the
-    // full-size sf1 run linear-in-corpus and cheap.)
-    "q286_nn_descent" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val emb = hashSample(t(s, dir, "embeddings"), "vec_id", 2)
-      val g = Similarity.nnDescentGraph(emb, k = 10, rounds = 3)
-      val truth = Similarity.bruteForceTopK(emb,
-          emb.filter(col("vec_id") < 30), k = 5, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-      truth
-        .join(g.select(col("v").as("query_id"),
-            col("u").as("neighbor_id"), lit(1L).as("hit")),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("long").as("found"))
-        .select(col("query_id"), col("found"),
-          round(col("found").cast("double") / lit(5.0), 6).as("recall"))
-        .orderBy(col("query_id"))
-    }))
-
-  /** Slice denominator of each [[largeBenchTier]] entry — the "1/N" of
-    * the tier, emitted next to the name in the bench JSON
-    * (`large_tiered: {name: N}`) so cross-round dashboards summing
-    * `total_large` can normalize when a tier notches (q209 went 1/4 →
-    * 1/8 in round 9; q301 gained a 1/4 tier in round 10; q273 LEFT the
-    * table in round 11 when its fixed pivot budget made full-size sf1
-    * linear — without the denominator those read as perf swings). */
-  def largeBenchTierSlice: Map[String, Int] = Map(
-    "q201_setjoin_exact" -> 4,
-    "q209_lsh_recall_cert" -> 8,
-    "q263_lof" -> 8,
-    "q304_weighted_neardup" -> 8,
-    "q301_dup_transitivity" -> 4,
-    "q310_dedup_threshold_sweep" -> 4,
-    "q286_nn_descent" -> 2)
-
-  /** Queries whose FIRST run against a corpus dir builds a persisted
-    * index/model artifact (ensurePersistedIndex / pqCodebookFor): in a
-    * single-pass large bench these run once UNTIMED first, so the timed
-    * pass measures the daily incremental cost (the operating mode the
-    * incremental family exists for), not the one-time build — exactly
-    * what min-of-2 passes gave when the budget allowed two. */
-  def largeIndexWarm: Seq[String] = Seq(
-    "q70_dedup_incr_fast", "q72_ann_pq", "q77_ann_ivfpq",
-    "q82_image_neardup_incr", "q108_clusters_incr", "q128_ivfpq_append",
-    "q228_ann_recall_sweep", "q295_nn_graph_append")
+  /** Each query's DuckDB oracle SQL, by name. */
+  lazy val oracleSql: Map[String, String] =
+    specs.map { case (n, q) => n -> q.oracleSql }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Region revenue rollup: 4-table join with broadcast dims. */
   def entry(spark: SparkSession): DataFrame =
     queries("q05_region_revenue")(spark, "/root/testdata/sf0.001")
-
-  // ---------------------------------------------------------------- queries
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- analytics over the star schema (SURVEY.md §2.3-§2.5) ----
-
-    "q01_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") < lit("1999-01-01").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("sum_disc_price"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * (lit(1.0) + col("l_tax"))).as("sum_charge"),
-          count(lit(1)).as("count_order"))
-        .withColumn("avg_qty", col("sum_qty") / col("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    "q02_top_customers" -> ((s, dir) => {
-      // customer is SF-LINEAR (entity-scale at 100 TB): the join stays
-      // unhinted so AQE broadcasts only when the side is genuinely
-      // small — a forced hint would bypass the size check and OOM
-      val c = t(s, dir, "customer")
-      t(s, dir, "orders")
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"))
-        .agg(dsum(col("o_totalprice")).as("revenue"),
-          count(lit(1)).as("n_orders"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(10)
-    }),
-
-    "q03_shipping_priority" -> ((s, dir) => {
-      // the segment filter trims customer ~5x but it stays SF-linear —
-      // unhinted, AQE picks broadcast only when actually small
-      val c = t(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(20)
-    }),
-
-    "q05_region_revenue" -> ((s, dir) => {
-      // nation (25) and region (5) are FIXED-cardinality — broadcast by
-      // construction; supplier is SF-linear, so its join stays unhinted
-      val nation = broadcast(t(s, dir, "nation"))
-      val region = broadcast(t(s, dir, "region"))
-      val supplier = t(s, dir, "supplier")
-      val customer = t(s, dir, "customer")
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(customer, col("o_custkey") === col("c_custkey"))
-        .join(supplier, col("l_suppkey") === col("s_suppkey")
-          && col("c_nationkey") === col("s_nationkey"))
-        .join(nation, col("s_nationkey") === col("n_nationkey"))
-        .join(region, col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"), count(lit(1)).as("n_items"))
-        .orderBy(col("r_name"), col("n_name"))
-    }),
-
-    "q04_order_priority" -> ((s, dir) => {
-      // TPC-H Q4 shape: conditional semi-join + count per priority
-      t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey")
-            && col("l_shipdate") > col("o_orderdate"), "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    "q06_forecast_revenue" -> ((s, dir) => {
-      // TPC-H Q6 shape: tight filter + single global aggregate
-      t(s, dir, "lineitem")
-        .filter(col("l_discount") >= 0.05 && col("l_discount") <= 0.07
-          && col("l_quantity") < 24)
-        .agg(dsum(col("l_extendedprice") * col("l_discount")).as("revenue"),
-          count(lit(1)).as("n"))
-    }),
-
-    "q10_semi_join" -> ((s, dir) => {
-      // semi/anti joins only need key EXISTENCE: distinct the fact-side
-      // key first so the exchange carries one row per key (map-side
-      // partial dedup) instead of every order, and the collapsed side
-      // broadcasts again at scale — semantics unchanged
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").select(col("o_custkey").as("c_custkey"))
-            .distinct(),
-          Seq("c_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    "q11_anti_join" -> ((s, dir) => {
-      // anti-join against URGENT orders only: every customer has SOME
-      // order in the synthetic data, so the unfiltered variant returned 0
-      // rows at verify scale and the oracle match was vacuous. The
-      // filtered probe side exercises the anti-join positively (203 rows
-      // at sf0.01) and still collapses to distinct keys before the join.
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders")
-            .filter(col("o_orderpriority") === "1-URGENT")
-            .select(col("o_custkey").as("c_custkey"))
-            .distinct(),
-          Seq("c_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    "q12_window_topn" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
-        .orderBy(col("o_custkey"), col("rk"))
-    }),
-
-    "q13_running_sum" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      t(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_shipdate"), col("l_orderkey"),
-          col("l_linenumber"),
-          sum(col("l_extendedprice").cast("decimal(38,6)")).over(w)
-            .cast("double").as("running_rev"))
-        .orderBy(col("l_suppkey"), col("l_shipdate"), col("l_orderkey"),
-          col("l_linenumber"))
-    }),
-
-    "q14_distinct_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_suppkey"))
-        .agg(countDistinct(col("l_partkey")).as("n_parts"),
-          count(lit(1)).as("n_rows"))
-        .orderBy(col("l_suppkey"))
-    }),
-
-    "q15_set_except" -> ((s, dir) => {
-      // nations with customers but no negative-balance supplier: the
-      // unfiltered except (customer nations \ supplier nations) is empty
-      // at every scale — all 25 nations carry both — so the gate never
-      // saw EXCEPT produce a row. Filtered, it returns 21 rows at sf0.01.
-      t(s, dir, "customer").select(col("c_nationkey").as("nationkey")).distinct()
-        .except(t(s, dir, "supplier").filter(col("s_acctbal") < 0)
-          .select(col("s_nationkey").as("nationkey"))
-          .distinct())
-        .orderBy(col("nationkey"))
-    }),
-
-    "q16_rollup" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)
-    }),
-
-    "q18_cube" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)
-    }),
-
-    "q17_highwater" -> ((s, dir) => {
-      // A2 high-water mark parity (reference: warehouse/redshift.go:342)
-      t(s, dir, "orders")
-        .agg(max(col("o_orderdate")).as("max_orderdate"),
-          min(col("o_orderdate")).as("min_orderdate"),
-          count(lit(1)).as("n"))
-    }),
-
-    // ---- event-stream parity (SURVEY.md §2.2, §2.6, §2.8) ----
-
-    "q20_evt_hourly" -> ((s, dir) => {
-      Sessionize.tumblingAgg(t(s, dir, "events"), "ts", "hour")
-        .orderBy(col("window_start"), col("event_type"))
-    }),
-
-    "q21_evt_json" -> ((s, dir) => {
-      // CustomVars JSON extraction (reference: README.md:113-120)
-      t(s, dir, "events")
-        .select(col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q22_evt_sessionize" -> ((s, dir) => {
-      Sessionize.sessionSummary(t(s, dir, "events"), "user_id", "ts",
-          "value", gapSeconds = 1800, tieCols = Seq("event_id"))
-        .orderBy(col("user_id"), col("session_seq"))
-    }),
-
-    "q23_evt_highwater" -> ((s, dir) => {
-      t(s, dir, "events").agg(max(col("ts")).as("high_water"),
-        count(lit(1)).as("n"))
-    }),
-
-    "q24_evt_gofmt" -> ((s, dir) => {
-      // P6 Go RFC3339Micro trailing-zero trim (warehouse/warehouse.go:59-65)
-      t(s, dir, "events")
-        .select(col("event_id"),
-          ValueFormat.goRfc3339Micro(col("ts")).as("event_start_str"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q25_evt_export" -> ((s, dir) => {
-      // The hauser record transform end-to-end on the events table:
-      // case-insensitive schema match, custom-var spillover, live-order
-      // staged strings (reference: internal/service.go:72-119).
-      val renamed = t(s, dir, "events").select(
-        col("event_id").as("IndvId"), col("user_id").as("UserId"),
-        col("ts").as("EventStart"), col("event_type").as("EventType"),
-        col("value").as("evt_value_real"), col("props").as("evt_props_str"))
-      val schema = ExportSchema.reconcileWithExisting(
-        Seq("IndvId", "UserId", "EventStart", "EventType", "CustomVars"))
-      ExportTransform.toStagedStrings(renamed, schema, ValueFormat.Default)
-        .select(col("IndvId"), col("UserId"), col("EventStart"),
-          col("EventType"), col("CustomVars"))
-        .orderBy(col("IndvId").cast("long"))
-    }),
-
-    "q19_approx_distinct" -> ((s, dir) => {
-      // HLL++ estimates are engine-specific, but the documented error
-      // bound is not: emit exact distinct counts (engine-portable) plus
-      // booleans asserting each sketch landed within 3*rsd of exact. The
-      // oracle emits TRUE for the booleans, so a sketch drifting out of
-      // bound hash-mismatches instead of hiding behind `no_oracle`.
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          count_distinct(col("l_partkey")).as("exact_parts"),
-          count_distinct(col("l_orderkey")).as("exact_orders"),
-          approx_count_distinct(col("l_partkey"), 0.05).as("ap"),
-          approx_count_distinct(col("l_orderkey"), 0.01).as("ao"))
-        .select(col("l_returnflag"), col("exact_parts"), col("exact_orders"),
-          (abs(col("ap") - col("exact_parts"))
-            <= col("exact_parts") * lit(3 * 0.05)).as("parts_within_tol"),
-          (abs(col("ao") - col("exact_orders"))
-            <= col("exact_orders") * lit(3 * 0.01)).as("orders_within_tol"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "q26_evt_props_agg" -> ((s, dir) => {
-      // aggregate over a JSON-extracted custom-var key; from_json parses
-      // the document once (get_json_object re-parses per path — q21 keeps
-      // it as the JSON_EXTRACT_PATH_TEXT parity form)
-      t(s, dir, "events")
-        .groupBy((from_json(col("props"),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("k",
-                org.apache.spark.sql.types.LongType)))).getField("k") % 10)
-          .as("k_bucket"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(38,6)")).cast("double").as("sum_value"))
-        .orderBy(col("k_bucket"))
-    }),
-
-    "q27_evt_minmax_by" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(max_by(col("event_id"), col("ts")).as("last_event_id"),
-          min_by(col("event_id"), col("ts")).as("first_event_id"),
-          count(lit(1)).as("n"))
-        .orderBy(col("user_id"))
-    }),
-
-    "q28_evt_moving_avg" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(-4, 0)
-      t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          (sum(col("value").cast("decimal(38,6)")).over(w).cast("double")
-            / count(lit(1)).over(w)).as("moving_avg"))
-        .orderBy(col("user_id"), col("ts"), col("event_id"))
-    }),
-
-    // ---- text analysis (extended scope, SURVEY.md §7.1 step 7) ----
-
-    "q30_doc_tokens" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-          TextAnalysis.bpeTokenCount(col("text")).cast("long")
-            .as("n_bpe_tokens"),
-          length(col("text")).cast("long").as("n_chars_actual"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q31_doc_quality" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.wordCount(col("text")).cast("long").as("n_words"),
-          round(TextAnalysis.meanWordLen(col("text")), 6).as("mean_word_len"),
-          round(TextAnalysis.stopwordRatio(col("text")), 6).as("stopword_ratio"),
-          round(TextAnalysis.punctRatio(col("text")), 6).as("punct_ratio"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q32_doc_langid" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q33_doc_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.fingerprint(col("text")).as("fp"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q34_dedup_exact" -> ((s, dir) => {
-      // exact dedup on the leading-64-char fingerprint (the crawl-dedup
-      // "prefix collision" key): full-text exact dups don't exist at
-      // sf0.01 (8 groups at sf0.1), so the full-text gate was vacuous at
-      // verify scale. The prefix key keeps the operator exact-hash-
-      // group-by and yields 22 groups at sf0.01.
-      Dedup.exactDuplicateGroups(
-          t(s, dir, "documents")
-            .withColumn("text", substring(col("text"), 1, 64)),
-          "doc_id", "text")
-        .orderBy(col("keep_id"))
-    }),
-
-    "q35_dedup_drop" -> ((s, dir) => {
-      Dedup.dropExactDuplicates(t(s, dir, "documents"), "doc_id", "text")
-        .agg(count(lit(1)).as("n_unique"))
-    }),
-
-    "q36_jaccard_pairs" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val d = t(s, dir, "documents")
-      val a = d.select(col("doc_id").as("a_id"), col("text").as("a_text"))
-      val b = d.select(col("doc_id").as("b_id"), col("text").as("b_text"))
-      a.join(b, col("b_id") === col("a_id") + 1)
-        .select(col("a_id"), col("b_id"),
-          round(Dedup.jaccardTokens(col("a_text"), col("b_text")), 6).as("sim"),
-          round(Dedup.jaccardShingles(col("a_text"), col("b_text"), 3), 6)
-            .as("sim3"))
-        .orderBy(col("a_id"))
-    }),
-
-    "q37_dedup_minhash_lsh" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-          k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = false)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q38_dedup_simhash" -> ((s, dir) => {
-      // portable md5-based SimHash — oracle-checkable hex signatures
-      GraftFunctions.register(s)
-      t(s, dir, "documents")
-        .select(col("doc_id"), Dedup.simhashHex(col("text")).as("simhash"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q39_dedup_minhash_fast" -> ((s, dir) => {
-      // the seeded-FNV scale path of q37; oracle = ground-truth all-pairs
-      // Jaccard (equality doubles as an LSH recall=1.0 check on this data)
-      GraftFunctions.register(s)
-      Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-          k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = true)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q51_percentiles" -> ((s, dir) => {
-      // exact interpolated percentiles (Spark percentile == DuckDB
-      // quantile_cont); the sketch-based approx path is q19
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          round(expr("percentile(l_quantity, 0.5)"), 6).as("p50"),
-          round(expr("percentile(l_quantity, 0.95)"), 6).as("p95"),
-          round(expr("percentile(l_extendedprice, 0.5)"), 6).as("med_price"),
-          count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "q48_doc_normalize" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.normalize(col("text")).as("norm_text"),
-          md5(TextAnalysis.normalize(col("text"))).as("norm_hash"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q49_union_all" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .select(col("c_nationkey").as("nationkey"),
-          lit("customer").as("side"))
-        .unionByName(t(s, dir, "supplier")
-          .select(col("s_nationkey").as("nationkey"),
-            lit("supplier").as("side")))
-        .groupBy(col("nationkey"), col("side"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("nationkey"), col("side"))
-    }),
-
-    "q50_set_intersect" -> ((s, dir) => {
-      t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-        .distinct()
-        .intersect(t(s, dir, "supplier")
-          .select(col("s_nationkey").as("nationkey")).distinct())
-        .orderBy(col("nationkey"))
-    }),
-
-    // ---- bucketed co-located fact-fact join (SURVEY.md §2.3) ----
-    // q52 runs on a bucketed-by-orderkey persisted copy of both fact
-    // tables: the sort-merge join consumes bucket layout directly, no
-    // Exchange below the join. q53 is the identical query on the raw
-    // parquet (SMJ forced, both sides shuffle) — the bench delta IS the
-    // per-query cost of the shuffle that bucketing amortizes to write
-    // time. Results are bit-identical; both share one oracle query.
-
-    "q52_join_bucketed" -> ((s, dir) => {
-      val (li, o) = bucketedFacts(s, dir)
-      factJoinAgg(li, o)
-    }),
-
-    "q53_join_shuffled" -> ((s, dir) =>
-      factJoinAgg(t(s, dir, "lineitem"), t(s, dir, "orders"))),
-
-    // ---- dedup clustering / PII / repetition / quantization ----
-
-    "q54_dedup_clusters" -> ((s, dir) => {
-      // connected components of the confirmed near-dup pair graph (the
-      // keep-one-representative step); pairs from the fast-FNV LSH path,
-      // whose confirmed set equals ground truth on this corpus (q39)
-      GraftFunctions.register(s)
-      val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id",
-        "text", k = 16, bands = 4, shingleN = 3, threshold = 0.5,
-        fast = true)
-      Dedup.nearDupClusters(pairs).orderBy(col("doc_id"))
-    }),
-
-    "q75_dedup_keep_best" -> ((s, dir) => {
-      // the SELECTION step a dedup pipeline ends with: per near-dup
-      // cluster keep the best-quality member (ties: lowest id); singleton
-      // docs cluster as themselves. Composition of the LSH pair generator,
-      // the label-propagation components, and the quality scorer. The
-      // argmax is two partial-combined aggregates (max quality per
-      // cluster, then min id among the maxima) — no cluster-partitioned
-      // window, so a million-member spam cluster can't funnel one task.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
-        bands = 4, shingleN = 3, threshold = 0.5, fast = true)
-      Dedup.keepBest(docs, pairs, "doc_id",
-          TextAnalysis.qualityScore(col("text")))
-        .orderBy(col("cluster_id"))
-    }),
-
-    "q55_pii_redact" -> ((s, dir) => {
-      // deterministic PII injection (mirrored in the oracle) so the
-      // redaction regexes are exercised on every row
-      val withPii = t(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"), lit(" contact user"), col("doc_id"),
-          lit("@example.com from 10.0."),
-          (col("doc_id") % 256).cast("string"), lit(".7 ssn 123-45-"),
-          format_string("%04d", col("doc_id") % 10000)).as("text"))
-      withPii.select(col("doc_id"),
-        TextAnalysis.redactPii(col("text")).as("redacted"),
-        TextAnalysis.piiCounts(col("text")).getField("n_email")
-          .as("n_email"),
-        TextAnalysis.piiCounts(col("text")).getField("n_ip").as("n_ip"),
-        TextAnalysis.piiCounts(col("text")).getField("n_ssn").as("n_ssn"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q56_doc_repetition" -> ((s, dir) => {
-      // Gopher-style repetition quality signals
-      GraftFunctions.register(s)
-      val toks = TextAnalysis.tokens(col("text"))
-      val total = size(toks).cast("double")
-      t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.dupNgramFrac(col("text"), 2).as("dup2"),
-        TextAnalysis.dupNgramFrac(col("text"), 3).as("dup3"),
-        when(total <= 0, lit(0.0)).otherwise(round(lit(1.0) -
-          size(array_distinct(toks)).cast("double") / total, 6))
-          .as("dup_word"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q57_vec_quantize" -> ((s, dir) => {
-      val q = Similarity.quantizeInt8(col("embedding"))
-      t(s, dir, "embeddings").select(col("vec_id"),
-        array_join(q.getField("codes"), ",").as("codes"),
-        q.getField("scale").as("scale"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "q62_token_freq" -> ((s, dir) => {
-      // vocabulary building: corpus-wide token frequencies, top 50.
-      // explode -> two-stage count agg (map-side partial combine); the
-      // shuffle moves (token, partial count), never documents
-      t(s, dir, "documents")
-        .select(explode_outer(TextAnalysis.tokens(col("text")))
-          .as("token"))
-        .groupBy(col("token"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token"))
-        .limit(50)
-    }),
-
-    "q63_hash_split" -> ((s, dir) => {
-      // reproducible train/val/test assignment by content-independent id
-      // hash — the large-pipeline idiom for deterministic, engine-portable
-      // splits (no rand(), no sampleBy: a retry or a different engine
-      // produces the identical split). 16 buckets on the first md5 hex
-      // char: 12/2/2 = 75%/12.5%/12.5%
-      val bucket = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val split = when(bucket < lit("c"), lit("train"))
-        .when(bucket < lit("e"), lit("val"))
-        .otherwise(lit("test"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), split.as("split"))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("min_id"),
-          max(col("doc_id")).as("max_id"))
-        .orderBy(col("split"))
-    }),
-
-    "q59_evt_pivot" -> ((s, dir) => {
-      // pivot with an explicit value list (deterministic schema — an
-      // inferred list would need an extra distinct pass over the corpus)
-      t(s, dir, "events")
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .pivot("event_type",
-          Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .orderBy(col("day"))
-    }),
-
-    "q60_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupingSets(
-          Seq(Seq(col("l_returnflag"), col("l_linestatus")),
-            Seq(col("l_returnflag")), Seq()),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)
-    }),
-
-    "q61_unpivot" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_orderkey") < 1000)
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_extendedprice"),
-            col("l_discount"), col("l_tax")),
-          "metric", "val")
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("metric"))
-    }),
-
-    "q58_simhash_pairs" -> ((s, dir) => {
-      // block-banded SimHash candidates + exact Hamming verify
-      // (recall 1.0 for hamming <= 3 by pigeonhole over 4 blocks)
-      GraftFunctions.register(s)
-      Dedup.simhashNearDupPairs(t(s, dir, "documents"), "doc_id", "text",
-          maxHamming = 3)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    // ---- similarity search (extended scope) ----
-
-    "q40_knn_brute" -> ((s, dir) => {
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 30), k = 5,
-          exact = true)
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "q41_ann_lsh" -> ((s, dir) => {
-      // LSH-bucketed ANN with exact re-rank — oracle-checkable (portable
-      // md5-derived hyperplanes + decimal-exact cosine)
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30), k = 5,
-          planes = 8, exact = true)
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "q64_ann_lsh_multiprobe" -> ((s, dir) => {
-      // multi-probe LSH (probeBits=1): each query additionally probes the
-      // planes buckets at Hamming distance 1 — the recall knob,
-      // correctness-pinned against the oracle's probe expansion
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30), k = 5,
-          planes = 8, exact = true, probeBits = 1)
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "q66_doc_pack" -> ((s, dir) => {
-      // pretraining sequence packing (concat-and-chunk at 2048 tokens):
-      // per-pack doc counts and token totals. The prefix sum underneath is
-      // the two-phase distributed form — no single-partition global window
-      TextAnalysis.packSequences(t(s, dir, "documents"), "doc_id", "text",
-          seqLen = 2048)
-        .groupBy(col("pack_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-        .orderBy(col("pack_id"))
-    }),
-
-    "q68_decontaminate" -> ((s, dir) => {
-      // benchmark decontamination: per-doc count of distinct 5-gram
-      // shingles shared with the "eval set" (doc_id < 10 here) — the
-      // pre-training overlap check. Eval shingles broadcast; the corpus
-      // side is map-side explode + broadcast join + partial count
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      TextAnalysis.contaminationOverlap(docs,
-          docs.filter(col("doc_id") < 10), "doc_id", "text", n = 5)
-        .select(col("id").as("doc_id"), col("n_overlap"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q71_boilerplate" -> ((s, dir) => {
-      // CCNet-style boilerplate: 3-gram passages occurring in >= 5 distinct
-      // docs are corpus boilerplate; per-doc fraction of such passages.
-      // One (shingle, count) shuffle; the Zipf head broadcasts back.
-      GraftFunctions.register(s)
-      TextAnalysis.boilerplateStats(t(s, dir, "documents"),
-          "doc_id", "text", n = 3, minDf = 5)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q79_span_dedup" -> ((s, dir) => {
-      // Lee-et-al substring-level dedup: 6-token spans occurring >= 2
-      // times anywhere are cut (keeper = first occurrence), overlapping
-      // cuts merge, only affected docs are rewritten. One corpus-wide
-      // (span, count) partial-combined shuffle; rewrite is a map-side HOF
-      // over affected docs only.
-      GraftFunctions.register(s)
-      TextAnalysis.spanDedup(t(s, dir, "documents"),
-          "doc_id", "text", n = 6, minOcc = 2)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q80_bpe_tokens" -> ((s, dir) => {
-      // REAL BPE token counts (Sennrich merges applied in rank order by
-      // the native one-pass expression) under the fixed fixture merge
-      // table — a pretrained-model artifact shipped as a plan literal,
-      // exactly how a production tokenizer deploys. The oracle replays
-      // the identical algebra in DuckDB as a replace() chain, so every
-      // count is exact, not gated. Corpus-trained tables come from
-      // Bpe.train (spec-pinned); tokenization itself is a map-side
-      // projection either way.
-      GraftFunctions.register(s)
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_words"),
-          Bpe.tokenCount(col("text"), Bpe.FixtureMerges).cast("long")
-            .as("n_bpe_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q81_image_neardup" -> ((s, dir) => {
-      // perceptual-hash image dedup: REAL PNG decode (javax.imageio) ->
-      // area-averaged 9x8 dHash -> the simhash banded-Hamming machinery.
-      // The gradient fixture encodes its own dHash bits as pixel steps,
-      // so the oracle predicts every bit arithmetically while Spark
-      // recovers them from actual pixels; doc_id % 100 == 99 rows carry
-      // undecodable bytes and must be flagged out, not hashed.
-      GraftFunctions.register(s)
-      val media = Multimodal.dhashMediaFromDocuments(t(s, dir, "documents"))
-      val hashes = Multimodal.extractImageHashes(media).toDF()
-      Dedup.imageNearDupPairs(hashes, maxHamming = 3)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q82_image_neardup_incr" -> ((s, dir) => {
-      // q81's PRODUCTION operating mode (the q70 pattern in the image
-      // domain): even-id images form the historical hash index, persisted
-      // as parquet once per corpus dir (untimed after the first pass);
-      // the timed body decodes + hashes ONLY the odd-id new batch and
-      // joins its blocks against the on-disk index — the historical
-      // corpus is never re-decoded. Old-vs-old pairs never form.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val media = Multimodal.dhashMediaFromDocuments(docs)
-      val idxDir = new java.io.File(
-        s".bench/q82_index_${corpusKey(dir)}").getAbsolutePath
-      val idxPath = ensurePersistedIndex(idxDir, docs.count()) {
-        Multimodal.extractImageHashes(
-            media.filter(_.doc_id % 2 == 0)).toDF()
-          .filter(col("decoded"))
-          .select(col("doc_id").as("id"), col("dhash").as("sig"))
-      }
-      val newSig = Multimodal.extractImageHashes(
-          media.filter(_.doc_id % 2 == 1)).toDF()
-        .filter(col("decoded"))
-        .select(col("doc_id").as("id"), col("dhash").as("sig"))
-      Dedup.bandedHammingPairsIncremental(newSig, s.read.parquet(idxPath),
-          maxHamming = 3)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q83_bpe_trained" -> ((s, dir) => {
-      // CORPUS-TRAINED BPE end to end: Bpe.train learns 50 merges from
-      // this corpus at runtime (distributed word counts + bounded driver
-      // loop), then the native tokenizer encodes every document. The
-      // merge table is runtime data, so counts aren't SQL-replayable;
-      // the gate is the q19/q72 pattern — per-doc booleans the oracle
-      // pins TRUE: lossless roundtrip (subwords concatenate back to the
-      // words), merge-set fixpoint (no adjacent emitted pair is still
-      // mergeable — the defining property of a completed BPE encode),
-      // and count bounds (n_words <= n_bpe <= non-space chars). A
-      // broken trainer or encoder flips a boolean and hash-mismatches.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val merges = Bpe.train(docs, "text", nMerges = 50)
-      val mergeKeys = merges.map { case (a, b) => a + " " + b }
-      val mergesLit = typedlit(merges.map(p => Seq(p._1, p._2)))
-      val words = TextAnalysis.tokens(col("text"))
-      // per-word encode: BPE never merges across words, so the fixpoint
-      // property (no adjacent mergeable pair) holds per WORD — a flat
-      // whole-doc subword list has coincidental cross-word adjacencies.
-      // Subwords contain no spaces, so "a b" pair keys are unambiguous.
-      val perWord = transform(words,
-        w => GraftFunctions.bpe_encode(array(w), mergesLit))
-      docs.select(col("doc_id"), words.as("w"), perWord.as("pw"))
-        .select(col("doc_id"), col("w"), col("pw"),
-          flatten(col("pw")).as("sub"))
-        .select(col("doc_id"),
-          size(col("w")).cast("long").as("n_words"),
-          (array_join(col("sub"), "") === array_join(col("w"), "") &&
-            !exists(col("pw"), ws => exists(
-              zip_with(ws,
-                slice(ws, lit(2), greatest(size(ws) - 1, lit(0))),
-                (x, y) => concat_ws(" ", x, y)),
-              p => array_contains(typedlit(mergeKeys), p))) &&
-            size(col("sub")) >= size(col("w")) &&
-            size(col("sub")) <= length(array_join(col("w"), "")))
-            .as("bpe_ok"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q84_image_clusters" -> ((s, dir) => {
-      // the image-dedup loop closed end to end: real decode -> dHash ->
-      // banded-Hamming pairs (q81) -> connected components via the same
-      // pointer-jumping label propagation as text dedup. One cluster id
-      // per image that has at least one near-dup — the keep-one-
-      // representative step for a media corpus.
-      GraftFunctions.register(s)
-      val media = Multimodal.dhashMediaFromDocuments(t(s, dir, "documents"))
-      val hashes = Multimodal.extractImageHashes(media).toDF()
-      val pairs = Dedup.imageNearDupPairs(hashes, maxHamming = 3)
-      Dedup.nearDupClusters(pairs).orderBy(col("doc_id"))
-    }),
-
-    "q85_semdedup" -> ((s, dir) => {
-      // SemDeDup (greedy keep-lowest-id per LSH bucket): one aggregate
-      // over the q42 pair stream — which vectors a semantic dedup pass
-      // would DROP, and on whose account. threshold 0.4 for the same
-      // reason as q42 (synthetic embeddings are near-orthogonal; the
-      // positive path must be exercised at verify scale)
-      GraftFunctions.register(s)
-      Dedup.semanticDedupDrops(t(s, dir, "embeddings"), "vec_id",
-          "embedding", planes = 6, threshold = 0.4, exact = true)
-        .select(col("id").as("vec_id"), col("dup_of"), col("n_earlier"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "q86_doc_chunk" -> ((s, dir) => {
-      // RAG/context chunking: 64-token windows every 48 tokens —
-      // zero-shuffle map-side windowing (plan-pinned)
-      TextAnalysis.chunkDocuments(t(s, dir, "documents"), "doc_id", "text",
-          chunkLen = 64, stride = 48)
-        .orderBy(col("doc_id"), col("chunk_id"))
-    }),
-
-    "q87_bigram_surprisal" -> ((s, dir) => {
-      // bigram-LM fluency scoring (add-0.5 smoothing) — the stronger
-      // cousin of q76's unigram rarity; DECIMAL accumulation keeps the
-      // per-doc ln-sum order-independent
-      TextAnalysis.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text",
-          alpha = 0.5)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q88_dsir_resample" -> ((s, dir) => {
-      // DSIR data selection: 100 docs that look most like the src0 slice
-      // under unigram importance weights + deterministic hash-Gumbel
-      // resampling (Xie et al. 2023; no rand(), engine-portable)
-      val docs = t(s, dir, "documents")
-      operators.Sampling.dsirResample(docs,
-          docs.filter(col("source") === "src0"), "doc_id", "text",
-          n = 100, alpha = 0.5)
-        .select(col("rk"), col("id").as("doc_id"), col("logw"), col("score"))
-        .orderBy(col("rk"))
-    }),
-
-    "q89_hard_negatives" -> ((s, dir) => {
-      // contrastive hard-negative mining: 5 nearest DIFFERENT-label
-      // neighbors per query — the label-mismatch predicate rides the
-      // broadcast join map-side; same bounded-heap shape as q40
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      Similarity.hardNegativesTopK(emb, emb.filter(col("vec_id") < 30),
-          k = 5, exact = true)
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "q90_decontaminate_bloom" -> ((s, dir) => {
-      // q68's decontamination at eval-set scales where the exact shingle
-      // set can't broadcast: distributed bloom build -> map-side
-      // might_contain prefilter -> shuffle-join verify on the surviving
-      // sliver. Same answer as q68 (bloom has no false negatives; the
-      // verify join kills false positives) — same oracle SQL.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      TextAnalysis.contaminationOverlapBloom(docs,
-          docs.filter(col("doc_id") < 10), "doc_id", "text", n = 5)
-        .select(col("id").as("doc_id"), col("n_overlap"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q91_quality_classifier" -> ((s, dir) => {
-      // classifier-based quality filtering (the GPT-3/LLaMA data-recipe
-      // step, distillation flavor): logistic regression over q31-style
-      // features, trained IN-QUERY by full-batch GD as
-      // decimal-accumulated aggregates (32 corpus scans, driver holds 5
-      // doubles), then a map-side scoring projection. The label is the
-      // composite q31 quality heuristic thresholded at 0.3 — the
-      // oracle-checkable stand-in for "distill an expensive judgment
-      // into a cheap linear model" (the trained classifier reaches ~99%
-      // agreement, so it genuinely learns the target, and the label
-      // stays engine-portable). Fully deterministic — the oracle
-      // RE-TRAINS via an unrolled CTE chain and must land on identical
-      // weights, so a diverged gradient anywhere is a hash mismatch.
-      val docs = t(s, dir, "documents")
-      val label = (TextAnalysis.qualityScore(col("text")) >= 0.3)
-      // persisted-model artifact (the pqCodebookFor contract): train
-      // once per corpus dir, scoring pays scoring
-      val w = logRegWeightsFor(s, dir, docs, label.cast("double"),
-        iters = 32, eta = 8.0)
-      operators.QualityClassifier.score(docs, "doc_id", "text", w,
-          extra = Seq(label.as("is_hq")))
-        .select(col("id").as("doc_id"), col("p"), col("pred"), col("is_hq"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q92_chunk_retrieval" -> ((s, dir) => {
-      // the RAG indexing loop closed IN-ENGINE: chunk (q86) -> embed
-      // (feature-hashing, md5-portable) -> exact cosine top-3 per query
-      // chunk. Model-free baseline wired through the same interface a
-      // real embedding column would use; queries = the chunks of docs
-      // 0-2 against the whole chunk corpus.
-      GraftFunctions.register(s)
-      val chunks = TextAnalysis.chunkDocuments(t(s, dir, "documents"),
-          "doc_id", "text", chunkLen = 64, stride = 48)
-        .select((col("doc_id") * 1000 + col("chunk_id")).cast("long")
-          .as("vec_id"), TextAnalysis.tokens(col("chunk_text")).as("toks"))
-      val vecs = Similarity.hashEmbeddings(chunks, "vec_id", "toks",
-        dim = 32).withColumnRenamed("id", "vec_id")
-      Similarity.bruteForceTopK(vecs, vecs.filter(col("vec_id") < 3000),
-          k = 3, exact = true)
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "q93_temperature_mix" -> ((s, dir) => {
-      // temperature-flattened language mixture (the multilingual
-      // pretraining idiom, mT5/XLM-R τ-sampling): sampling weight
-      // w_i ∝ n_i^τ with τ = 0.5 flattens the Zipf head and boosts tail
-      // languages; target size M = half the corpus; per-language keep
-      // probability p_i = M·w_i/n_i realized by the same deterministic
-      // md5-hash threshold as q67 (no rand(); retry/engine-stable).
-      // τ = 0.5 deliberately uses sqrt (IEEE-exact in both engines, no
-      // pow() libm drift) and the weight denominator accumulates in
-      // DECIMAL(38,6) so partial-agg order can't flip a bit.
-      val docs = t(s, dir, "documents")
-      val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_total"))
-      val tot = counts.agg(sum(col("n_total")).as("n_corpus"),
-        sum(sqrt(col("n_total").cast("double")).cast("decimal(38,6)"))
-          .cast("double").as("sw"))
-      val thr = counts.crossJoin(tot)
-        .withColumn("p",
-          floor(col("n_corpus") / 2).cast("double")
-            * sqrt(col("n_total").cast("double")) / col("sw")
-            / col("n_total").cast("double"))
-        .withColumn("thr", lower(lpad(hex(least(
-          floor(col("p") * lit(4294967296L)).cast("long"),
-          lit(4294967295L))), 8, "0")))
-        .withColumn("w",
-          round(sqrt(col("n_total").cast("double")) / col("sw"), 6))
-        .select(col("lang"), col("n_total"), col("w"), col("thr"))
-      docs.join(operators.Hints.boundedBroadcast(thr, "lang_domain"),
-          Seq("lang"))
-        .filter(substring(md5(col("doc_id").cast("string")), 1, 8)
-          < col("thr"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"))
-        .join(thr.select(col("lang"), col("n_total"), col("w")), Seq("lang"))
-        .select(col("lang"), col("n_total"), col("w"), col("n_kept"))
-        .orderBy(col("lang"))
-    }),
-
-    "q94_semantic_decontaminate" -> ((s, dir) => {
-      // embedding-space decontamination: the paraphrase-robust
-      // complement of q68/q90's shingle overlap — corpus vectors whose
-      // cosine vs ANY eval vector (vec_id < 30) clears 0.35, with the
-      // best-matching eval item. Threshold 0.35 for the q42 reason
-      // (near-orthogonal synthetic embeddings; the positive path must
-      // be exercised at verify scale: 34 raw hits at sf0.01).
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      Dedup.semanticContamination(emb, emb.filter(col("vec_id") < 30),
-          "vec_id", "embedding", threshold = 0.35, exact = true)
-        .select(col("id").as("vec_id"), col("n_hits"), col("best_eval"),
-          col("sim"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "q73_doc_tfidf" -> ((s, dir) => {
-      // per-doc top-3 TF-IDF terms; integer rank key (tf desc, df asc,
-      // term asc) so no rank ever hangs on the last bit of ln()
-      TextAnalysis.tfidfTopTerms(t(s, dir, "documents"),
-          "doc_id", "text", topN = 3)
-        .orderBy(col("doc_id"), col("rk"))
-    }),
-
-    "q72_ann_pq" -> ((s, dir) => {
-      // PQ-compressed ANN: 64-dim floats become m=8 codes; the corpus scan
-      // reads codes only. Approximate by nature, so the oracle gate is a
-      // recall floor against the exact brute-force top-k computed in the
-      // same job (the q19 pattern: the oracle emits TRUE, and a recall
-      // collapse becomes a hash mismatch, not a vacuous row).
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 30)
-      val cb = pqCodebookFor(s, dir, emb)
-      val pq = Similarity.pqTopK(emb, qs, cb, k = 10)
-      val exact = Similarity.bruteForceTopK(emb, qs, k = 10)
-      // exact invariant: 10 results per query; approximate invariant: the
-      // 30-query recall@10 total stays >= 45 (observed 86-100; chance level
-      // for k=10 against this corpus is < 1) — both TRUE/constant in the
-      // oracle, so a recall collapse or a short result set hash-mismatches
-      val totalHits = pq.select(col("query_id"), col("neighbor_id"))
-        .join(exact.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .agg(count(lit(1)).as("th"))
-      qs.select(col("vec_id").as("query_id"))
-        .join(pq.groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_results")), Seq("query_id"), "left")
-        .crossJoin(broadcast(totalHits))
-        .select(col("query_id"),
-          coalesce(col("n_results"), lit(0L)).cast("long").as("n_results"),
-          (col("th") >= 45).as("recall_floor_ok"))
-        .orderBy(col("query_id"))
-    }),
-
-    "q74_doc_stratified" -> ((s, dir) => {
-      // exact-count per-language sample (the "same-size eval slice per
-      // language" ask): two-phase candidate trim, so only ~margin*n rows
-      // per group ever reach the rank window — the naive per-group window
-      // is the skew cliff at 100 TB (one language can be half the corpus)
-      graft.operators.Sampling.stratifiedSample(
-          t(s, dir, "documents"), "lang", "doc_id", n = 20)
-        .select(col("lang"), col("doc_id"), col("rk"))
-        .orderBy(col("lang"), col("rk"))
-    }),
-
-    "q77_ann_ivfpq" -> ((s, dir) => {
-      // IVF-PQ (the FAISS IVFPQ shape): coarse cell pruning (nprobe=3 of
-      // 8 cells) over the shared persisted PQ codebook — per-query work
-      // is the probed cells' code words, never the float corpus. The
-      // (cell_id, codes) INDEX is a persisted parquet artifact (the q70
-      // pattern: a real pipeline has yesterday's index on disk; built
-      // once per corpus dir, untimed after the first pass), so the timed
-      // body is probe + ADC only — the float vectors are never scanned
-      // at search time. Gate = the q72 pattern: exact per-query result
-      // counts + a recall floor vs the in-job brute-force ground truth.
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 30)
-      val cb = pqCodebookFor(s, dir, emb)
-      val seeds = emb.filter(col("vec_id") < 8)
-      val idxDir = new java.io.File(
-        s".bench/q77_index_${corpusKey(dir)}").getAbsolutePath
-      val idxPath = ensurePersistedIndex(idxDir, emb.count()) {
-        Similarity.ivfPqIndex(emb, seeds, cb)
-      }
-      val pq = Similarity.ivfPqSearch(s.read.parquet(idxPath), qs, seeds,
-        cb, k = 10, nprobe = 3)
-      val exact = Similarity.bruteForceTopK(emb, qs, k = 10)
-      val totalHits = pq.select(col("query_id"), col("neighbor_id"))
-        .join(exact.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .agg(count(lit(1)).as("th"))
-      qs.select(col("vec_id").as("query_id"))
-        .join(pq.groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_results")), Seq("query_id"), "left")
-        .crossJoin(broadcast(totalHits))
-        .select(col("query_id"),
-          coalesce(col("n_results"), lit(0L)).cast("long").as("n_results"),
-          (col("th") >= 35).as("recall_floor_ok")) // observed 67-111
-        .orderBy(col("query_id"))
-    }),
-
-    "q78_corpus_card" -> ((s, dir) => {
-      // the dataset-datasheet aggregate a corpus release ships with: per
-      // source, doc/token counts, decimal-exact mean quality, and the
-      // dominant language via the two-step argmax (max count per source,
-      // then min lang among maxima — no per-source rank window)
-      val docs = t(s, dir, "documents")
-      val base = docs.select(col("source"), col("lang"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("toks"),
-        TextAnalysis.qualityScore(col("text")).as("q"))
-      val bySrc = base.groupBy(col("source")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("toks")).cast("long").as("n_tokens"),
-        round(sum(col("q").cast("decimal(38,6)")).cast("double")
-          / count(lit(1)), 6).as("mean_quality"))
-      val lc = base.groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n"))
-      val mx = lc.groupBy(col("source")).agg(max(col("n")).as("mxn"))
-      val top = lc.join(mx, Seq("source")).filter(col("n") === col("mxn"))
-        .groupBy(col("source"))
-        .agg(min(col("lang")).as("top_lang"),
-          max(col("mxn")).cast("long").as("top_lang_n"))
-      bySrc.join(top, Seq("source")).orderBy(col("source"))
-    }),
-
-    "q76_doc_surprisal" -> ((s, dir) => {
-      // unigram LM surprisal (perplexity proxy) from the corpus's own
-      // token counts; decimal-accumulated per-doc sum keeps the double
-      // arithmetic order-independent across engines
-      TextAnalysis.unigramSurprisal(t(s, dir, "documents"),
-          "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    "q67_doc_mix" -> ((s, dir) => {
-      // deterministic mixture rebalancing: downsample every language to
-      // the smallest language's share (the pretraining "uniform mixture"
-      // resample) by hash threshold, not rand()/sampleBy — a retry or a
-      // different engine keeps the identical document set. Keep rule:
-      // first 8 md5 hex chars of doc_id < lpad(hex(floor(p*2^32)))
-      // (lexicographic == numeric for fixed-width lowercase hex); p
-      // clamped to (2^32-1)/2^32 so the 8-digit pad never truncates.
-      // Threshold derivation is a tiny two-level aggregate broadcast back
-      // — no window, no shuffle of the corpus beyond the final group-by.
-      val docs = t(s, dir, "documents")
-      val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_total"))
-      val thr = counts.crossJoin(counts.agg(min(col("n_total")).as("minc")))
-        .withColumn("thr", lower(lpad(hex(least(
-          floor((col("minc").cast("double") / col("n_total").cast("double"))
-            * lit(4294967296L)).cast("long"),
-          lit(4294967295L))), 8, "0")))
-        .select(col("lang"), col("n_total"), col("thr"))
-      docs.join(operators.Hints.boundedBroadcast(thr, "lang_domain"),
-          Seq("lang"))
-        .filter(substring(md5(col("doc_id").cast("string")), 1, 8)
-          < col("thr"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"), min(col("doc_id")).as("min_id"),
-          max(col("doc_id")).as("max_id"))
-        .join(thr.select(col("lang"), col("n_total")), Seq("lang"))
-        .select(col("lang"), col("n_total"), col("n_kept"), col("min_id"),
-          col("max_id"))
-        .orderBy(col("lang"))
-    }),
-
-    "q65_dedup_incremental" -> ((s, dir) => {
-      // incremental minhash dedup — the 100 TB operating mode: odd doc_ids
-      // are "today's batch", even doc_ids the persisted historical index;
-      // only pairs touching a new id form (old-vs-old never re-verifies).
-      // Same index parameters as q37, so pairs(q37) =
-      // pairs(even-only) ∪ this result.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      Dedup.minhashLshPairsIncremental(
-          Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
-            "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = false),
-          Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 0),
-            "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = false),
-          threshold = 0.5)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q70_dedup_incr_fast" -> ((s, dir) => {
-      // q65's PRODUCTION shape: fast seeded-FNV signatures (~10x cheaper
-      // than md5) and a parquet-persisted historical index. The index is
-      // built once per corpus dir (untimed after the first pass, like
-      // q52's bucketed tables — a real pipeline already has yesterday's
-      // index on disk), so the timed body is what a daily run pays:
-      // signature the new batch and join it against on-disk buckets.
-      // Oracle = ground-truth all-pairs Jaccard restricted to pairs
-      // touching a new (odd) id — equality doubles as an LSH recall=1.0
-      // check, exactly as q39 pins the full fast path.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val idxDir = new java.io.File(
-        s".bench/q70_index_${corpusKey(dir)}").getAbsolutePath
-      val idxPath = ensurePersistedIndex(idxDir, docs.count()) {
-        Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = true)
-      }
-      Dedup.minhashLshPairsIncremental(
-          Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
-            "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = true),
-          s.read.parquet(idxPath), threshold = 0.5)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q42_emb_neardup" -> ((s, dir) => {
-      // embedding-cosine near-dup pairs via LSH buckets — oracle-checkable.
-      // threshold 0.4: the synthetic embeddings are near-orthogonal (max
-      // same-bucket cosine 0.445 at sf0.01), so a production-style 0.9
-      // returns zero rows at verify scale and the oracle match is vacuous;
-      // 0.4 keeps the gate exercising the positive path (5 rows at sf0.01,
-      // 57 at sf0.1) through the same bucket/verify machinery
-      GraftFunctions.register(s)
-      Dedup.embeddingNearDupPairs(t(s, dir, "embeddings"), "vec_id",
-          "embedding", planes = 6, threshold = 0.4, exact = true)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q45_emb_centroid" -> ((s, dir) => {
-      // per-label mean embedding: vector aggregation via posexplode
-      t(s, dir, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "v")))
-        .select(col("label"), (col("pos0") + 1).cast("long").as("pos"),
-          col("v").cast("double").cast("decimal(38,20)").as("vd"))
-        .groupBy(col("label"), col("pos"))
-        // round(9) absorbs the 1-ulp divergence of decimal->double
-        // conversion between engines
-        .agg(round(sum(col("vd")).cast("double") / count(lit(1)), 9)
-          .as("mean_val"), count(lit(1)).as("n_vecs"))
-        .orderBy(col("label"), col("pos"))
-    }),
-
-    "q46_ann_ivf" -> ((s, dir) => {
-      // IVF cell-probe ANN; seeds = first 8 vectors — oracle-checkable
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 30),
-          emb.filter(col("vec_id") < 8), k = 5, exact = true)
-        .orderBy(col("query_id"), col("rk"))
-    }),
-
-    "q47_asof_join" -> ((s, dir) => {
-      // point-in-time lookup: for each purchase, the user's latest click
-      // at or before it (operators.AsOfJoin — union+window, no range join)
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts"),
-          col("value").as("click_value"))
-      operators.AsOfJoin.asofJoin(purchases, clicks, "user_id", "ts", "ts",
-          Seq("click_id", "click_value"))
-        .select(col("event_id"), col("user_id"), col("click_id"),
-          col("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ---- multimodal plumbing (image decode real via javax.imageio, ----
-    // ---- audio real via javax.sound.sampled; video kernel stubbed  ----
-    // ---- — the JDK ships no video codec)                           ----
-
-    "q43_mm_features" -> ((s, dir) => {
-      val media = Multimodal.mediaFromDocuments(t(s, dir, "documents"))
-      // ALL THREE decodes are real: image rows are PNG payloads decoded by
-      // javax.imageio (features from actual pixels); audio rows are WAV
-      // payloads decoded by javax.sound.sampled (features from actual PCM
-      // frames); video rows are raw-DIB AVI payloads decoded by the
-      // VideoCodec RIFF walk (dims from the avih header, mean red from the
-      // actual frame pixels — DIB is lossless, so the oracle predicts the
-      // exact value). byte_len is encoder output size, not SQL-predictable,
-      // so it is not part of the oracle-checked projection.
-      Multimodal.extractFeatures(media)
-        .select(col("doc_id"), col("modality"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("n_frames").cast("long").as("n_frames"),
-          col("channels").cast("long").as("channels"),
-          col("mean_red"), col("decoded"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q69_mm_decode" -> ((s, dir) => {
-      // end-to-end pixel-exact decode: every document becomes a solid-
-      // colour PNG whose dimensions and colour are pure functions of
-      // doc_id, encoded with ImageIO.write in-cluster and decoded back
-      // with ImageIO.read — so the oracle predicts every feature, and a
-      // hash match proves the codec really ran over real pixels.
-      val media = Multimodal.imageMediaFromDocuments(t(s, dir, "documents"))
-      Multimodal.extractFeatures(media)
-        .select(col("doc_id"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("channels").cast("long").as("channels"),
-          col("mean_red"), col("decoded"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q44_mm_frames" -> ((s, dir) => {
-      // REAL frame sampling: every third frame of each video row's AVI is
-      // decoded (RIFF walk + raw-DIB pixels) and emits (frame_idx,
-      // mean_red) — the oracle predicts both from the fixture formula
-      // because DIB frames are lossless.
-      Multimodal.sampleFrames(
-          Multimodal.mediaFromDocuments(t(s, dir, "documents")), everyN = 3)
-        .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"),
-          col("mean_red"))
-        .orderBy(col("doc_id"), col("frame_idx"))
-    }),
-
-    "q95_shard_plan" -> ((s, dir) => {
-      // the training-data writer's manifest: deterministic md5 shard
-      // assignment (the q63 idiom — no rand(), identical shards on retry
-      // or on another engine) + per-shard row/byte/source totals and the
-      // key range each sorted shard file will span. One partial-combined
-      // aggregation; the actual file write is Sharding.writeShards (spec
-      // covers the round trip — a manifest row per written directory).
-      operators.Sharding.shardStats(t(s, dir, "documents"), "doc_id",
-          nShards = 16, sizeCol = "n_chars", srcCol = "source")
-        .orderBy(col("shard"))
-    }),
-
-    "q96_quantile_sketch" -> ((s, dir) => {
-      // the sketch family at 100 TB: per-type KLL quantile sketch
-      // (approx_percentile) alongside q19's HLL distinct. Sketch outputs
-      // are engine-private, so the q19 gate pattern applies: emit exact,
-      // portable values plus booleans asserting each sketch landed inside
-      // its documented error bound — the oracle emits TRUE, and a sketch
-      // drifting out of bound hash-mismatches instead of hiding. The
-      // quantile gate checks RANK (share of values <= the sketch's p50 /
-      // p95) — the only thing a KLL sketch actually promises; tolerance
-      // = 0.02 + 2/n for the value-at-rank discretization of small types.
-      val ev = t(s, dir, "events")
-      val sk = ev.groupBy(col("event_type")).agg(
-        count(lit(1)).as("n_events"),
-        count_distinct(col("user_id")).as("n_users"),
-        approx_count_distinct(col("user_id"), 0.02).as("au"),
-        percentile_approx(col("value"), array(lit(0.5), lit(0.95)),
-          lit(10000)).as("ap"))
-      val ranks = ev
-        .join(operators.Hints.boundedBroadcast(
-            sk.select(col("event_type"), col("ap")), "event_type_domain"),
-          Seq("event_type"))
-        .groupBy(col("event_type"))
-        .agg(avg((col("value") <= col("ap")(0)).cast("double")).as("r50"),
-          avg((col("value") <= col("ap")(1)).cast("double")).as("r95"))
-      val tol = lit(0.02) + lit(2.0) / col("n_events").cast("double")
-      sk.join(ranks, Seq("event_type"))
-        .select(col("event_type"), col("n_events"), col("n_users"),
-          (abs(col("au") - col("n_users"))
-            <= col("n_users") * lit(3 * 0.02)).as("users_within_tol"),
-          (abs(col("r50") - lit(0.5)) <= tol).as("p50_rank_ok"),
-          (abs(col("r95") - lit(0.95)) <= tol).as("p95_rank_ok"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q97_source_cap" -> ((s, dir) => {
-      // RefinedWeb-style per-domain cap with quality priority: at most 50
-      // docs per source, keeping the HIGHEST-quality ones (q31's portable
-      // score). The bounded TopKAgg heap makes this a partial-combined
-      // aggregation — never a corpus-wide per-domain window (one domain
-      // can be half of 100 TB; the heap exchange is ≤50 rows per
-      // partition-group regardless).
-      operators.Sampling.cappedByScore(t(s, dir, "documents"), "source",
-          "doc_id", TextAnalysis.qualityScore(col("text")), n = 50)
-        .select(col("source"), col("doc_id"), col("score"), col("rk"))
-        .orderBy(col("source"), col("rk"))
-    }),
-
-    "q98_cdc_chunks" -> ((s, dir) => {
-      // content-defined chunking + chunk-digest dup counts (the
-      // storage-dedup primitive, LBFS/FastCDC cut-point shape with an
-      // engine-portable md5-window boundary rule). Zero shuffle until the
-      // digest dup-count exchange; the cut scan is one codegen'd kernel
-      // pass per row (CdcPairs).
-      GraftFunctions.register(s)
-      TextAnalysis.cdcChunks(t(s, dir, "documents"), "doc_id", "text",
-          w = 8)
-        .select(col("id").as("doc_id"), col("chunk_id"), col("start_pos"),
-          col("chunk_len"), col("digest"), col("n_dups"))
-        .orderBy(col("doc_id"), col("chunk_id"))
-    }),
-
-    "q99_pack_bpe" -> ((s, dir) => {
-      // q66's sequence packing priced in REAL BPE tokens (q80's native
-      // tokenizer under the fixture merge table) instead of whitespace
-      // words — what a production pre-tokenized pipeline actually packs
-      // by. Same two-phase distributed prefix sum; only the per-doc
-      // counter changes, and the oracle replays both the merge algebra
-      // and the packing algebra exactly.
-      GraftFunctions.register(s)
-      TextAnalysis.packSequences(t(s, dir, "documents"), "doc_id", "text",
-          seqLen = 2048, counter = Some(
-            Bpe.tokenCount(col("text"), Bpe.FixtureMerges)))
-        .groupBy(col("pack_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-        .orderBy(col("pack_id"))
-    }),
-
-    "q100_event_context" -> ((s, dir) => {
-      // sequence-model training examples from the event log: per-user
-      // time-ordered (3-event context -> next event) windows, aggregated
-      // to the context->next distribution a behavioral-cloning /
-      // next-event model trains on. The lag window partitions by
-      // user_id — per-user state is bounded and users are many, so the
-      // exchange spreads evenly (the per-entity window that IS the right
-      // shape at 100 TB, unlike a corpus-global window); the trigram
-      // distribution then partial-combines.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("p1", lag(col("event_type"), 1).over(w))
-        .withColumn("p2", lag(col("event_type"), 2).over(w))
-        .withColumn("p3", lag(col("event_type"), 3).over(w))
-        .filter(col("p3").isNotNull)
-        .groupBy(col("p3"), col("p2"), col("p1"),
-          col("event_type").as("next_type"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("p3"), col("p2"), col("p1"), col("next_type"))
-    }),
-
-    "q101_funnel" -> ((s, dir) => {
-      // ordered funnel over the behavioral event log (the reference's
-      // export feeds exactly this class of warehouse query): users who
-      // viewed, then clicked strictly after their first view, then
-      // purchased strictly after that click. Each stage is one
-      // aggregation + an equi-join on user_id — every exchange keys on
-      // the same column so the shuffles line up (and AQE can reuse the
-      // exchange); no per-user window, no event-sequence explosion.
-      val ev = t(s, dir, "events")
-      def stage(typ: String, prev: DataFrame, prevTs: String,
-                out: String): DataFrame =
-        ev.filter(col("event_type") === typ)
-          .join(prev, Seq("user_id"))
-          .filter(col("ts") > col(prevTs))
-          .groupBy(col("user_id")).agg(min(col("ts")).as(out))
-      val s1 = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t1"))
-      val s2 = stage("click", s1, "t1", "t2")
-      val s3 = stage("purchase", s2, "t2", "t3")
-      def cnt(df: DataFrame, idx: Int, name: String): DataFrame =
-        df.agg(count(lit(1)).as("n_users"))
-          .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
-            col("n_users"))
-      cnt(s1, 1, "view").unionByName(cnt(s2, 2, "click"))
-        .unionByName(cnt(s3, 3, "purchase"))
-        .orderBy(col("stage_idx"))
-    }),
-
-    "q102_retention" -> ((s, dir) => {
-      // cohort retention matrix: users bucketed by first-active day,
-      // counted on each later active day within the first week. Two
-      // aggregations + one join, all keyed on user_id; the matrix
-      // partial-combines. The (user, day) distinct is the only extra
-      // exchange — exactly the dedup a retention query must pay.
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      val first = ev.groupBy(col("user_id"))
-        .agg(min(col("day")).as("cohort_day"))
-      ev.join(first, Seq("user_id"))
-        .withColumn("day_offset", datediff(col("day"), col("cohort_day")))
-        .filter(col("day_offset") <= 7)
-        .groupBy(date_format(col("cohort_day"), "yyyy-MM-dd")
-          .as("cohort_day"), col("day_offset"))
-        .agg(count_distinct(col("user_id")).as("n_users"))
-        .orderBy(col("cohort_day"), col("day_offset"))
-    }),
-
-    "q103_attribution" -> ((s, dir) => {
-      // last-touch attribution: every purchase credits the user's most
-      // recent preceding non-purchase event (ties on ts broken by max
-      // event_id — the asofJoin rightTieBreak, so the credit is
-      // deterministic under retries). The as-of composition is ONE
-      // shuffle on user_id + a per-user carry-forward window — never an
-      // inequality join (which plans as a per-key cross product: a
-      // power user's touch history x their purchases at 100 TB).
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      val touches = ev.filter(col("event_type") =!= "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_type").as("touch_type"), col("event_id"))
-      operators.AsOfJoin.asofJoin(purchases, touches, "user_id",
-          "ts", "ts", Seq("touch_type"), rightTieBreak = Some("event_id"))
-        .groupBy(coalesce(col("touch_type"), lit("none")).as("touch_type"))
-        .agg(count(lit(1)).as("n_purchases"))
-        .orderBy(col("touch_type"))
-    }),
-
-    "q104_error_spikes" -> ((s, dir) => {
-      // operational anomaly detection on the event stream: days whose
-      // error rate exceeds 2x the trailing-7-day mean rate. The corpus
-      // collapses to one row per day FIRST (partial-combined counts —
-      // the only full-data pass), so the trailing window runs over a
-      // driver-scale day series; rates compare through DECIMAL(38,18)
-      // cross-products (rate > 2*mean <=> errs*prior_events >
-      // 2*events*prior_errs) — no double division on either engine.
-      import org.apache.spark.sql.expressions.Window
-      val daily = t(s, dir, "events")
-        .groupBy(date_format(to_date(col("ts")), "yyyy-MM-dd").as("day"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L))
-            .as("n_errors"))
-      val w = Window.orderBy(col("day")).rowsBetween(-7, -1)
-      daily
-        .withColumn("prior_events", sum(col("n_events")).over(w))
-        .withColumn("prior_errors", sum(col("n_errors")).over(w))
-        .filter(col("prior_events").isNotNull)
-        .select(col("day"), col("n_events"), col("n_errors"),
-          (col("n_errors").cast("decimal(38,18)") * col("prior_events")
-            > col("n_events").cast("decimal(38,18)") * col("prior_errors")
-              * lit(2)).as("spike"))
-        .orderBy(col("day"))
-    }),
-
-    "q105_fuzzy_join" -> ((s, dir) => {
-      // cross-TABLE record linkage: documents from sources src0-src9 (the
-      // "crawl") fuzzy-joined to documents from src10-src19 (the
-      // "reference corpus") by MinHash-banded blocking + exact shingle-
-      // Jaccard verify. The two sides are independent tables with their
-      // own id spaces — pairs are NOT canonicalized, and at scale the
-      // right side is the reference corpus's PERSISTED minhash index
-      // (the q70 artifact), so linking never re-signatures it.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val srcNum = expr("int(substring(source, 4))")
-      Dedup.fuzzyJoin(
-          Dedup.minhashIndex(docs.filter(srcNum < 10),
-            "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = false),
-          Dedup.minhashIndex(docs.filter(srcNum >= 10),
-            "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = false),
-          threshold = 0.3)
-        .orderBy(col("left_id"), col("right_id"))
-    }),
-
-    "q106_heavy_hitters" -> ((s, dir) => {
-      // frequent-items primitive with a count-min cross-check: exact
-      // (token, count) heavy hitters at share >= 0.2%, each estimate
-      // checked against the CM sketch's two documented guarantees (never
-      // undercounts; overcount <= eps*N w.p. 1-delta). The oracle replays
-      // the exact counts and pins both booleans TRUE — the q19/q96
-      // sketch-gate pattern.
-      operators.TextAnalysis.heavyHitters(t(s, dir, "documents"), "text",
-          minShare = 0.002, eps = 1e-4, confidence = 0.99)
-        .orderBy(col("token"))
-    }),
-
-    "q107_pagerank" -> ((s, dir) => {
-      // link-graph centrality as a quality prior (the original web-scale
-      // PageRank use): customers and suppliers are nodes, a purchase is
-      // an (undirected -> symmetrized) edge; 5 fixed iterations of
-      // Graph.pageRank. Per iteration: contributions are per-edge DOUBLE
-      // divisions accumulated in DECIMAL(38,20) (aggregation order can't
-      // flip a bit), ranks re-quantized with round(.,12) — so the DuckDB
-      // oracle's unrolled 5-CTE replay (the q91 pattern) lands on
-      // identical bits.
-      // NOT materialized (r13 measured): the two symmetrization arms are
-      // identical subtrees up to the projection, so runtime exchange
-      // reuse already covers the join+distinct; a localCheckpoint here
-      // measured +0.8 s of pure write cost (unlike q273/q293, whose
-      // consumers' differing filters defeat reuse)
-      val base = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "lineitem")
-            .select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("c"),
-          concat(lit("s"), col("l_suppkey")).as("p"))
-        .distinct()
-      val edges = base.select(col("c").as("src"), col("p").as("dst"))
-        .unionByName(base.select(col("p").as("src"), col("c").as("dst")))
-      // broadcastRanks: this is an ENTITY graph — the node set is
-      // customers + suppliers (dimension-scale even at 100 TB), so the
-      // rank table broadcasts and the big edge table never shuffles
-      // distinctEdges=false: `base` is distinct and the two union arms
-      // cannot collide (prefixes differ), so the dedup shuffle is skipped
-      operators.Graph.pageRank(edges, iters = 5, broadcastRanks = true,
-          distinctEdges = false)
-        .orderBy(col("node"))
-    }),
-
-    "q108_clusters_incr" -> ((s, dir) => {
-      // the FULL incremental dedup pipeline in one query — q70's persisted
-      // pair-index story completed with persisted CLUSTER LABELS: the
-      // historical (even-id) corpus's minhash index AND its cluster-label
-      // table live on disk (untimed after the first pass); the timed body
-      // is exactly what a daily run pays — signature the odd-id batch,
-      // band-join it against the on-disk index, and merge the confirmed
-      // new pairs into the on-disk labels by graph contraction (CC runs
-      // over the contracted batch-sized graph, never the historical one).
-      // Oracle = q54's ground-truth recursive closure over the FULL
-      // corpus: incremental == full recompute, by construction.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val evens = docs.filter(col("doc_id") % 2 === 0)
-      val key = corpusKey(dir)
-      val idxDir = new java.io.File(s".bench/q108_index_$key").getAbsolutePath
-      val nRows = docs.count()
-      val idxPath = ensurePersistedIndex(idxDir, nRows) {
-        Dedup.minhashIndex(evens, "doc_id", "text",
-          k = 16, bands = 4, shingleN = 3, fast = true)
-      }
-      val labDir = new java.io.File(s".bench/q108_labels_$key").getAbsolutePath
-      val labPath = ensurePersistedIndex(labDir, nRows) {
-        Dedup.nearDupClusters(Dedup.minhashLshPairs(evens, "doc_id", "text",
-          k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = true))
-      }
-      val newPairs = Dedup.minhashLshPairsIncremental(
-        Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = true),
-        s.read.parquet(idxPath), threshold = 0.5)
-      Dedup.nearDupClustersIncremental(s.read.parquet(labPath), newPairs)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q109_interval_join" -> ((s, dir) => {
-      // interval join via bin bucketing: every event within ±10 min of an
-      // error by the same user (incident-context extraction). A raw
-      // ts-BETWEEN join plans as a per-key cross product — a power user's
-      // events × errors — so RangeJoin routes candidates through a
-      // (user_id, time-bin) equi-join (bin 1200 s = the window span, so an
-      // interval spans ≤ 2 bins) and the exact containment is a residual
-      // filter. Pairs-per-bin bound the work, not pairs-per-user.
-      val ev = t(s, dir, "events")
-      val errs = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("err_id"),
-          col("ts").as("err_ts"),
-          (col("ts") - expr("INTERVAL 600 SECONDS")).as("w_start"),
-          (col("ts") + expr("INTERVAL 600 SECONDS")).as("w_end"))
-      operators.RangeJoin.intervalJoin(
-          ev.select(col("user_id"), col("event_id"), col("ts")),
-          errs, "user_id", "ts", "w_start", "w_end", binSeconds = 1200)
-        .filter(col("event_id") =!= col("err_id"))
-        .select(col("user_id"), col("event_id"), col("err_id"),
-          abs(unix_micros(col("ts")) - unix_micros(col("err_ts")))
-            .as("gap_us"))
-        .orderBy(col("user_id"), col("event_id"), col("err_id"))
-    }),
-
-    "q110_filter_funnel" -> ((s, dir) => {
-      // C4/RefinedWeb-style cleaning-funnel report: per-stage survivor and
-      // drop counts for the cascade blocklist → lang → length → quality.
-      // ONE corpus scan (each stage is a conditional-sum column of a single
-      // partial-combined aggregate), not one count job per stage.
-      Sampling.filterFunnel(t(s, dir, "documents"), Seq(
-        "blocklist" -> !col("source").isin("src17", "src18", "src19"),
-        "lang_en" -> (col("lang") === "en"),
-        "min_len" -> (col("n_chars") >= 200),
-        "quality" -> (TextAnalysis.qualityScore(col("text")) >= 0.3)))
-        .orderBy(col("stage_id"))
-    }),
-
-    "q111_range_window" -> ((s, dir) => {
-      // trailing 1-hour per-user activity via a RANGE window frame (frame
-      // bounds in event-time units, not row counts — the time-based
-      // sibling of q28's rows frame). The sum accumulates in
-      // DECIMAL(38,6) so partial order can't flip a bit.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_s"))
-        .rangeBetween(-3600, 0)
-      t(s, dir, "events")
-        .withColumn("ts_s", col("ts").cast("long"))
-        .select(col("user_id"), col("event_id"), col("ts"),
-          count(lit(1)).over(w).as("n_1h"),
-          sum(col("value").cast("decimal(38,6)")).over(w)
-            .cast("double").as("sum_1h"))
-        .orderBy(col("user_id"), col("event_id"))
-    }),
-
-    "q112_gopher_rules" -> ((s, dir) => {
-      // Gopher quality rules (Rae et al. 2021): word-count bounds, mean
-      // word length in [3,10], >= 2 stopwords, 80% alphabetic words,
-      // bounded symbol share — all in INTEGER arithmetic (no double ratio
-      // ever forms), one map-side codegen'd projection, no shuffle. The
-      // cheapest gate of the cleaning cascade, so it runs first at 100 TB.
-      TextAnalysis.gopherRules(t(s, dir, "documents"), "doc_id", "text",
-          minWords = 50L, maxWords = 100000L)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q113_url_dedup" -> ((s, dir) => {
-      // canonical-URL dedup: the crawl corpus' messy fetch URLs (scheme/
-      // host case, default ports, trailing slashes, utm tracking params,
-      // fragments — derived deterministically per doc_id, 4 variants per
-      // canonical page) collapse through the REAL RFC3986-subset
-      // canonicalizer (operators.Urls — a pure regexp Column chain, no
-      // UDF); the oracle predicts each canonical arithmetically from the
-      // fixture derivation, so Spark must recover it exactly. One
-      // partial-combined shuffle on the canonical key.
-      operators.Urls.canonicalDedup(
-          t(s, dir, "documents").select(col("doc_id"),
-            messyUrlCol.as("url")),
-          "doc_id", "url")
-        .orderBy(col("canonical_url"))
-    }),
-
-    "q114_audio_neardup" -> ((s, dir) => {
-      // audio fingerprint dedup: REAL WAV decode (javax.sound.sampled) ->
-      // 65-window energy envelope -> 64-bit gradient hash -> the shared
-      // banded-Hamming machinery. The envelope fixture encodes the SAME
-      // bit formula as q81's gradient PNGs (amplitude steps instead of
-      // pixel steps), so the two modalities share one oracle algebra;
-      // doc_id % 100 == 99 rows carry undecodable bytes and must be
-      // flagged out, not hashed.
-      GraftFunctions.register(s)
-      val media = Multimodal.ahashMediaFromDocuments(t(s, dir, "documents"))
-      val hashes = Multimodal.extractAudioHashes(media).toDF()
-      Dedup.audioNearDupPairs(hashes, maxHamming = 3)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q115_snapshot_diff" -> ((s, dir) => {
-      // corpus version diff: snapshot OLD (doc_id % 7 <> 3) vs snapshot
-      // NEW (doc_id % 11 <> 5, every doc_id % 5 == 0 body edited) —
-      // added/removed/modified/unchanged by content md5. Hashes form
-      // map-side; the full-outer join shuffles (id, hash) only, never
-      // document bodies.
-      val docs = t(s, dir, "documents")
-      val oldSnap = docs.filter(col("doc_id") % 7 =!= 3)
-      val newSnap = docs.filter(col("doc_id") % 11 =!= 5)
-        .withColumn("text",
-          when(col("doc_id") % 5 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")))
-      operators.SnapshotDiff.diff(oldSnap, newSnap, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    "q116_emb_whiten" -> ((s, dir) => {
-      // per-dimension standardization of the embedding corpus: one
-      // partial-combined aggregate -> d stat rows broadcast back over the
-      // element stream (the corpus shuffles once for the stats, never for
-      // the transform). Moments in DECIMAL(38,20), z-scores in one fixed
-      // IEEE op order -> oracle-exact.
-      Similarity.whiten(t(s, dir, "embeddings"), "vec_id", "embedding")
-        .orderBy(col("vec_id"), col("pos"))
-    }),
-
-    "q117_token_drift" -> ((s, dir) => {
-      // token-distribution drift between source slices (src0-9 vs the
-      // rest): per-token KL contribution under add-1 unigram LMs over the
-      // union vocab — the between-snapshot data-drift monitor. One
-      // (token, conditional-count) shuffle; totals are 3 driver scalars;
-      // selection by integer count gate, never a double order-by.
-      val sliceA = col("source").isin(
-        (0 until 10).map(i => s"src$i"): _*)
-      TextAnalysis.tokenDrift(t(s, dir, "documents"), "text", sliceA,
-          minCount = 10L)
-        .orderBy(col("token"))
-    }),
-
-    "q118_video_neardup" -> ((s, dir) => {
-      // video key-frame dedup completes the near-dup trio: REAL AVI
-      // first-frame decode (RIFF walk, raw-DIB pixels) -> the SAME dHash
-      // kernel as still images -> the shared banded-Hamming machinery.
-      // Frame 0 of the fixture encodes the q81/q114 bit formula as pixel
-      // steps (raw-DIB is lossless), so all three modalities verify
-      // against one oracle algebra; doc_id % 100 == 99 rows carry
-      // undecodable bytes and must be flagged out, not hashed.
-      GraftFunctions.register(s)
-      val media = Multimodal.vhashMediaFromDocuments(t(s, dir, "documents"))
-      val hashes = Multimodal.extractVideoHashes(media).toDF()
-      Dedup.videoNearDupPairs(hashes, maxHamming = 3)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q119_salted_join" -> ((s, dir) => {
-      // explicit skew salting with EXACT join semantics: the event fact
-      // side takes a deterministic row-hash salt, the user dimension
-      // explodes `salts` ways, and the join key becomes (key, salt) —
-      // each hot key spreads over 8 reducers. The oracle is the PLAIN
-      // join aggregate: salting must change the shuffle layout and
-      // nothing else.
-      val ev = t(s, dir, "events")
-      val dim = ev.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-      operators.Skew.saltedJoin(
-          ev.select(col("user_id"), col("event_id"), col("value")),
-          dim, "user_id", salts = 8)
-        .groupBy(col("user_id"), col("n_events"))
-        .agg(count(lit(1)).as("n_joined"),
-          sum(col("value").cast("decimal(38,6)")).cast("double")
-            .as("sum_value"))
-        .orderBy(col("user_id"))
-    }),
-
-    "q120_domain_stats" -> ((s, dir) => {
-      // per-domain crawl statistics — the granularity blocklists, caps
-      // and quality priors are kept at: registrable domain (host minus
-      // www.) through the REAL parser over the messy fetch URLs, with
-      // per-domain page counts, distinct canonical pages, and corpus
-      // mass. One partial-combined shuffle on the domain key.
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("n_chars"), messyUrlCol.as("url"))
-      docs.select(operators.Urls.domain(col("url")).as("domain"),
-          operators.Urls.canonical(col("url")).as("canonical_url"),
-          col("n_chars"))
-        .groupBy(col("domain"))
-        .agg(count(lit(1)).as("n_pages"),
-          countDistinct(col("canonical_url")).as("n_canonical"),
-          sum(col("n_chars")).as("total_chars"))
-        .orderBy(col("domain"))
-    }),
-
-    "q121_winsorized_mean" -> ((s, dir) => {
-      // robust per-type value statistics: exact p05/p95 (one tiny per-type
-      // percentile aggregate, broadcast back), values clipped to the
-      // fences map-side, mean in DECIMAL(38,6) — outlier-robust metric
-      // aggregation without a UDF or a second full sort.
-      val ev = t(s, dir, "events")
-      val fences = ev.groupBy(col("event_type")).agg(
-        expr("percentile(value, 0.05)").as("lo"),
-        expr("percentile(value, 0.95)").as("hi"))
-      ev.join(operators.Hints.boundedBroadcast(fences, "event_type_domain"),
-        Seq("event_type"))
-        .select(col("event_type"),
-          least(greatest(col("value"), col("lo")), col("hi")).as("w"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("w").cast("decimal(38,6)")).cast("double")
-            / count(lit(1)), 9).as("winsorized_mean"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q122_temporal_split" -> ((s, dir) => {
-      // temporal train/test split with a leakage guard — eval hygiene
-      // for behavioral models: events split at a time cutoff, then each
-      // split reports how much of it comes from users who ALSO appear on
-      // the other side (the leaked population a user-disjoint protocol
-      // must exclude). JOIN-FREE at any scale: the presence table is
-      // user-cardinality (entity-scale at 100 TB — round 8 force-
-      // broadcast it back over the corpus, the one plan class that OOMs
-      // a 100x scale-up), but the verdict never needed the re-join. The
-      // ONLY corpus exchange is one partial-combined (user, split)
-      // count; per-user presence and both splits' event/user/clean
-      // tallies all derive from that bounded table.
-      val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-22 00:00:00"))
-      val uc = t(s, dir, "events")
-        .withColumn("split",
-          when(col("ts") < cutoff, lit("train")).otherwise(lit("test")))
-        .groupBy(col("user_id"), col("split"))
-        .agg(count(lit(1)).as("c"))
-      val u = uc.groupBy(col("user_id")).agg(
-        sum(when(col("split") === "train", col("c")).otherwise(0L))
-          .as("ct"),
-        sum(when(col("split") === "test", col("c")).otherwise(0L))
-          .as("cte"))
-      // each user emits its (split, own-count, other-side-count) rows;
-      // a user absent from a split contributes nothing to it (n = 0)
-      u.select(explode(array(
-          struct(lit("train").as("split"), col("ct").as("n"),
-            col("cte").as("other")),
-          struct(lit("test").as("split"), col("cte").as("n"),
-            col("ct").as("other")))).as("e"))
-        .select(col("e.split").as("split"), col("e.n").as("n"),
-          col("e.other").as("other"))
-        .filter(col("n") > 0)
-        .groupBy(col("split"))
-        .agg(sum(col("n")).as("n_events"),
-          count(lit(1)).as("n_users"),
-          sum(when(col("other") === 0, col("n")).otherwise(0L))
-            .as("n_clean_events"))
-        .orderBy(col("split"))
-    }),
-
-    "q123_kmv_overlap" -> ((s, dir) => {
-      // corpus-overlap monitoring without a corpus join: one bounded KMV
-      // sketch (k smallest distinct md5 shingle hashes, partial-combined
-      // KMinStringsAgg — the shuffle moves p*k strings, never the shingle
-      // stream) per language slice, pairwise Jaccard estimated from the
-      // sketches alone. The oracle replicates the sketch algebra exactly
-      // (same md5, same lexicographic k-min, same merged-k intersection
-      // count), so the estimate is hash-checked, not tolerance-gated.
-      GraftFunctions.register(s)
-      operators.Overlap.sliceOverlap(t(s, dir, "documents"), "lang", "text",
-          shingleN = 3, k = 256)
-        .orderBy(col("slice_a"), col("slice_b"))
-    }),
-
-    "q124_markov_chain" -> ((s, dir) => {
-      // first-order behavioral Markov chain over the event log: per-user
-      // streams ordered by (ts, event_id), adjacent prev->next transition
-      // counts, row-normalized into probabilities. The lag window
-      // partitions on user_id (entity-bounded state — the scalable window
-      // shape); after the partial-combined count the table is |types|^2
-      // rows, so the normalizing row-total window is over a tiny frame.
-      // Probability is an exact small-int division, rounded — the count
-      // columns, not the float, carry the hash check's weight.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val pairs = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("next_type", lead(col("event_type"), 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy(col("event_type").as("prev_type"), col("next_type"))
-        .agg(count(lit(1)).as("n"))
-      val wp = Window.partitionBy(col("prev_type"))
-      pairs
-        .select(col("prev_type"), col("next_type"), col("n"),
-          round(col("n").cast("double") / sum(col("n")).over(wp), 6)
-            .as("p"))
-        .orderBy(col("prev_type"), col("next_type"))
-    }),
-
-    "q125_token_pmi" -> ((s, dir) => {
-      // PMI collocations over the corpus: adjacent-bigram pointwise
-      // mutual information with positional marginals, gated by the
-      // integer bigram count — the multi-word-unit detector feeding
-      // phrase-aware vocab/dedup. Bigrams form map-side; one (w1,w2)
-      // partial-combined exchange; marginals reduce the count table.
-      operators.TextAnalysis.pmiCollocations(
-          t(s, dir, "documents"), "text", minCount = 5L)
-        .orderBy(col("w1"), col("w2"))
-    }),
-
-    "q126_hll_mergeable" -> ((s, dir) => {
-      // mergeable distinct-count sketches — the incremental form of
-      // q120's n_canonical: each ingest batch (doc_id parity here)
-      // builds its own per-domain Datasketches HLL sketch (a
-      // persistable binary artifact), and the corpus-wide answer is a
-      // sketch UNION — old batches are never rescanned. The estimate
-      // is engine-specific, so the hash-checked output is the q19
-      // contract: exact distinct + a boolean pinning the union
-      // estimate within 3*rsd(lgK=12) of exact. The deliberate second
-      // (exact) pass exists only for that gate.
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), messyUrlCol.as("url"))
-        .select(col("doc_id"),
-          operators.Urls.domain(col("url")).as("domain"),
-          operators.Urls.canonical(col("url")).as("canonical_url"))
-      val sketches = docs
-        .groupBy(col("domain"), (col("doc_id") % 2).as("batch"))
-        .agg(hll_sketch_agg(col("canonical_url"), 12).as("sk"))
-      val merged = sketches.groupBy(col("domain"))
-        .agg(count(lit(1)).as("n_batches"),
-          hll_sketch_estimate(hll_union_agg(col("sk"), allowDifferentLgConfigK = false))
-            .as("est"))
-      val exact = docs.groupBy(col("domain"))
-        .agg(countDistinct(col("canonical_url")).as("exact_urls"))
-      val tol = 3.0 * 1.04 / math.sqrt((1 << 12).toDouble)
-      exact.join(merged, Seq("domain"))
-        .select(col("domain"), col("exact_urls"), col("n_batches"),
-          (abs(col("est") - col("exact_urls")).cast("double")
-            <= greatest(lit(1.0), col("exact_urls") * lit(tol)))
-            .as("within_tol"))
-        .orderBy(col("domain"))
-    }),
-
-    "q127_zorder_layout" -> ((s, dir) => {
-      // Z-order layout planning (the OPTIMIZE ZORDER BY analog): events
-      // clustered on the Morton curve of (user bucket, hour-of-day), 16
-      // equal-width Z-range shards, per-shard min/max of BOTH dims — the
-      // file statistics a layout writer persists for scan pruning. The
-      // interleave is one codegen'd shift/mask projection riding the
-      // scan; the only exchange is the shard-stats aggregate. Each shard
-      // pins both dims to a <=64-cell span, which is the pruning story a
-      // single-column sort cannot give.
-      val ev = t(s, dir, "events")
-        .select((col("user_id") % 256).as("ub"), hour(col("ts")).as("hb"))
-      operators.Layout.zorderShardStats(ev, "ub", "hb",
-          bits = 8, nShards = 16)
-        .orderBy(col("shard"))
-    }),
-
-    "q128_ivfpq_append" -> ((s, dir) => {
-      // incremental ANN index APPEND — the q70 incremental-dedup pattern
-      // applied to IVF-PQ: new vectors (vec_id % 10 == 9) arrive after
-      // the historical index was built and persisted; the append encodes
-      // ONLY the new rows under the frozen codebook/seed model (no
-      // retraining, history never re-scanned or re-encoded) and the
-      // search runs over disk-index UNION fresh-codes. Per-row encoding
-      // is deterministic under a frozen model, so the unioned index is
-      // row-identical to a full rebuild (OperatorsSpec pins it); the
-      // oracle gate is the q77 contract: exact per-query counts + a
-      // recall floor vs in-job brute force.
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      val hist = emb.filter(col("vec_id") % 10 =!= 9)
-      val fresh = emb.filter(col("vec_id") % 10 === 9)
-      val qs = emb.filter(col("vec_id") < 30)
-      val cb = pqCodebookFor(s, dir, emb)
-      val seeds = emb.filter(col("vec_id") < 8)
-      val idxDir = new java.io.File(
-        s".bench/q128_hist_${corpusKey(dir)}").getAbsolutePath
-      val idxPath = ensurePersistedIndex(idxDir, hist.count()) {
-        Similarity.ivfPqIndex(hist, seeds, cb)
-      }
-      val index = s.read.parquet(idxPath)
-        .unionByName(Similarity.ivfPqIndex(fresh, seeds, cb))
-      val pq = Similarity.ivfPqSearch(index, qs, seeds, cb,
-        k = 10, nprobe = 3)
-      val exact = Similarity.bruteForceTopK(emb, qs, k = 10)
-      val totalHits = pq.select(col("query_id"), col("neighbor_id"))
-        .join(exact.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"))
-        .agg(count(lit(1)).as("th"))
-      qs.select(col("vec_id").as("query_id"))
-        .join(pq.groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_results")), Seq("query_id"), "left")
-        .crossJoin(broadcast(totalHits))
-        .select(col("query_id"),
-          coalesce(col("n_results"), lit(0L)).cast("long").as("n_results"),
-          (col("th") >= 35).as("recall_floor_ok")) // q77's observed band
-        .orderBy(col("query_id"))
-    }),
-
-    "q129_integrity_audit" -> ((s, dir) => {
-      // referential-integrity audit across the star schema — the
-      // data-quality gate an ingest pipeline runs before publishing a
-      // snapshot: orphan counts per FK edge via left_anti joins. Small
-      // parents (nation) broadcast; the lineitem->orders edge is a
-      // keyed shuffle anti-join (the scale path). Each edge is one
-      // aggregate; the verdict unions four 1-row frames.
-      def audit(name: String, idx: Int, child: DataFrame, childKey: String,
-                parent: DataFrame, parentKey: String,
-                bcast: Boolean): DataFrame = {
-        val p = parent.select(col(parentKey).as(childKey)).distinct()
-        val orphans = child
-          .join(if (bcast) broadcast(p) else p, Seq(childKey), "left_anti")
-          .agg(count(lit(1)).as("n_orphans"))
-        child.agg(count(lit(1)).as("n_child_rows"))
-          .crossJoin(orphans)
-          .select(lit(idx).as("check_idx"), lit(name).as("fk_edge"),
-            col("n_child_rows"), col("n_orphans"),
-            (col("n_orphans") === 0L).as("ok"))
-      }
-      audit("lineitem.l_orderkey->orders", 1,
-          t(s, dir, "lineitem"), "l_orderkey",
-          t(s, dir, "orders").withColumnRenamed("o_orderkey", "l_orderkey"),
-          "l_orderkey", bcast = false)
-        .unionByName(audit("orders.o_custkey->customer", 2,
-          t(s, dir, "orders").withColumnRenamed("o_custkey", "c_custkey"),
-          "c_custkey", t(s, dir, "customer"), "c_custkey", bcast = false))
-        .unionByName(audit("customer.c_nationkey->nation", 3,
-          t(s, dir, "customer"), "c_nationkey",
-          t(s, dir, "nation").withColumnRenamed("n_nationkey", "c_nationkey"),
-          "c_nationkey", bcast = true))
-        .unionByName(audit("supplier.s_nationkey->nation", 4,
-          t(s, dir, "supplier"), "s_nationkey",
-          t(s, dir, "nation").withColumnRenamed("n_nationkey", "s_nationkey"),
-          "s_nationkey", bcast = true))
-        .orderBy(col("check_idx"))
-    }),
-
-    "q130_k_anonymity" -> ((s, dir) => {
-      // k-anonymity audit over quasi-identifiers — the privacy gate for
-      // releasing behavioral data: rows whose (event_type, hour,
-      // value-bucket) tuple occurs fewer than k=5 times are
-      // re-identifiable and must be suppressed or generalized. One
-      // partial-combined tuple count, then a per-type rollup of risky
-      // tuples/rows — the corpus shuffles once on the tuple key.
-      val k = 5L
-      t(s, dir, "events")
-        .select(col("event_type"), hour(col("ts")).as("hb"),
-          floor(col("value") / 10.0).cast("long").as("vb"))
-        .groupBy(col("event_type"), col("hb"), col("vb"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_tuples"),
-          sum(when(col("n") < k, 1L).otherwise(0L)).as("n_risky_tuples"),
-          sum(when(col("n") < k, col("n")).otherwise(0L))
-            .as("n_risky_rows"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q131_mad_outliers" -> ((s, dir) => {
-      // robust anomaly detection: per-type median/MAD (the
-      // outlier-resistant spread measure) and the count of |x - med| >
-      // 3.5*MAD rows — the metric-drift monitor q121's winsorizing
-      // complements. Exact medians mean a deliberate multi-pass over the
-      // stream (median -> MAD -> count; the whiten/heavyHitters
-      // precedent): each pass is one tiny per-type aggregate broadcast
-      // back, the corpus never shuffles.
-      val ev = t(s, dir, "events").select(col("event_type"), col("value"))
-      val med = ev.groupBy(col("event_type"))
-        .agg(expr("percentile(value, 0.5)").as("med"))
-      val dev = ev.join(operators.Hints.boundedBroadcast(med, "event_type_domain"),
-        Seq("event_type"))
-        .select(col("event_type"), col("value"), col("med"),
-          abs(col("value") - col("med")).as("adev"))
-      val mad = dev.groupBy(col("event_type"))
-        .agg(expr("percentile(adev, 0.5)").as("mad"))
-      dev.join(operators.Hints.boundedBroadcast(mad, "event_type_domain"),
-        Seq("event_type"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(max(col("med")), 9).as("med"),
-          round(max(col("mad")), 9).as("mad"),
-          sum(when(abs(col("value") - col("med"))
-            > lit(3.5) * col("mad"), 1L).otherwise(0L)).as("n_outliers"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q132_event_paths" -> ((s, dir) => {
-      // order-2 user-journey mining: the most frequent 3-step
-      // event-type paths (the funnel-discovery complement of q124's
-      // transition matrix). Two leads over the same user-partitioned
-      // window (one sort, entity-bounded state), then a partial-combined
-      // path count with an INTEGER support gate — no float ordering.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type").as("e1"))
-        .withColumn("e2", lead(col("e1"), 1).over(w))
-        .withColumn("e3", lead(col("e1"), 2).over(w))
-        .filter(col("e3").isNotNull)
-        .groupBy(col("e1"), col("e2"), col("e3"))
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 10)
-        .orderBy(col("n").desc, col("e1"), col("e2"), col("e3"))
-    }),
-
-    "q133_html_extract" -> ((s, dir) => {
-      // HTML main-content extraction over a messy-markup fixture (the
-      // messyUrlCol pattern, applied to crawl HTML): each document is
-      // wrapped in deterministic template markup — title, style/script
-      // blocks whose CONTENTS must drop, nav and footer boilerplate —
-      // and Spark must recover title/main/visible text through the real
-      // regex pipeline. The oracle builds the identical HTML in SQL and
-      // runs the identical RE2-compatible pipeline. All projections
-      // ride the scan; the query has no join and no aggregate.
-      val html = concat(
-        lit("<html><head><title>Doc "), col("doc_id").cast("string"),
-        lit("</title><style>p{color:red}</style></head><body>" +
-          "<nav><a href=\"/\">home</a> <a href=\"/about\">about</a></nav>" +
-          "<div id=\"main\"><p>"),
-        col("text"),
-        lit("</p></div><footer>(c) 2024 example</footer>" +
-          "<script>var x=1;</script></body></html>"))
-      t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .withColumn("html", html)
-        .select(col("doc_id"),
-          TextAnalysis.htmlTitle(col("html")).as("title"),
-          (TextAnalysis.htmlParagraphs(col("html")) === col("text"))
-            .as("recovered"),
-          length(TextAnalysis.htmlParagraphs(col("html"))).cast("long")
-            .as("main_len"),
-          length(TextAnalysis.stripHtml(col("html"))).cast("long")
-            .as("full_len"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q134_domain_prior" -> ((s, dir) => {
-      // per-domain quality prior with Bayesian shrinkage: small domains
-      // pull toward the corpus mean with prior strength m=20
-      // (mean_shrunk = (n*mean_d + m*mean_g)/(n+m)) — the stabilized
-      // per-domain score blocklists and sampling weights actually use,
-      // where a 3-page domain's raw mean is noise. One domain-keyed
-      // partial-combined aggregate; the global mean is a 1-row
-      // broadcast; means accumulate in DECIMAL(38,6) (house dsum rule)
-      // and the shrinkage arithmetic runs in one fixed double op order.
-      val docs = t(s, dir, "documents")
-        .select(operators.Urls.domain(messyUrlCol).as("domain"),
-          col("n_chars"))
-      val per = docs.groupBy(col("domain"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars").cast("decimal(38,6)")).as("s"))
-        .withColumn("mean_chars",
-          col("s").cast("double") / col("n_docs").cast("double"))
-      val g = docs.agg(count(lit(1)).as("gn"),
-        sum(col("n_chars").cast("decimal(38,6)")).as("gs"))
-        .select((col("gs").cast("double") / col("gn").cast("double"))
-          .as("mean_g"))
-      per.crossJoin(broadcast(g))
-        .select(col("domain"), col("n_docs"),
-          round(col("mean_chars"), 6).as("mean_chars"),
-          round((col("n_docs").cast("double") * col("mean_chars")
-              + lit(20.0) * col("mean_g"))
-            / (col("n_docs").cast("double") + lit(20.0)), 6)
-            .as("mean_shrunk"))
-        .orderBy(col("domain"))
-    }),
-
-    "q135_group_topk" -> ((s, dir) => {
-      // group-wise top-k WITHOUT a window: the 3 longest documents per
-      // source via the bounded TopKAgg heap — each partition ships <=3
-      // candidates per source instead of sorting every row of every
-      // group (the per-group window cliff when a hot group holds a
-      // million rows). Heap order (score desc, doc_id asc) makes ranks
-      // deterministic.
-      operators.TopK.groupTopK(
-          t(s, dir, "documents")
-            .select(col("source"), col("doc_id"), col("n_chars")),
-          "source", col("n_chars").cast("double"), "doc_id", k = 3)
-        .orderBy(col("source"), col("rk"))
-    }),
-
-    "q136_window_zoo" -> ((s, dir) => {
-      // the ranking/distribution window-function surface in one
-      // oracle-checked query: ntile, percent_rank, cume_dist, lag with
-      // a default, first/last value over an explicit running frame —
-      // all on ONE user-partitioned total order (ts, event_id), so one
-      // sort serves every function and state stays entity-bounded.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val wr = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          ntile(4).over(w).as("quartile"),
-          round(percent_rank().over(w), 9).as("prank"),
-          round(cume_dist().over(w), 9).as("cdist"),
-          lag(col("value"), 1, -1.0).over(w).as("prev_value"),
-          first(col("event_id")).over(wr).as("first_id"),
-          last(col("event_id")).over(wr).as("last_id_so_far"))
-        .orderBy(col("user_id"), col("event_id"))
-    }),
-
-    "q137_setops_all" -> ((s, dir) => {
-      // multiset set-ops (ALL variants — q15 covers the distinct forms):
-      // the event-type multiset of even event_ids INTERSECT ALL / EXCEPT
-      // ALL the odd ones, summarized per type. Spark plans both as keyed
-      // count-compare aggregates — no sort, no window.
-      val ev = t(s, dir, "events")
-      val a = ev.filter(col("event_id") % 2 === 0).select(col("event_type"))
-      val b = ev.filter(col("event_id") % 2 === 1).select(col("event_type"))
-      a.intersectAll(b).groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(lit("intersect_all").as("op"), col("event_type"), col("n"))
-        .unionByName(
-          a.exceptAll(b).groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"))
-            .select(lit("except_all").as("op"), col("event_type"),
-              col("n")))
-        .orderBy(col("op"), col("event_type"))
-    }),
-
-    "q138_bm25" -> ((s, dir) => {
-      // BM25 lexical retrieval (the Lucene k1/b formulation): top 20
-      // documents for a 3-term query. The exploded token stream is
-      // trimmed to the broadcast query-term set MAP-SIDE, so the one
-      // (doc, term) exchange carries only matching postings — scoring a
-      // 10-term query over 100 TB shuffles 10 terms' postings, not the
-      // corpus. df is a ≤|query|-row broadcast; N/avgdl ride a 1-row
-      // broadcast cross join; the top-N is a bounded TakeOrdered.
-      operators.Retrieval.bm25(t(s, dir, "documents"), "doc_id", "text",
-          Seq("spark", "join", "window"), k1 = 1.2, b = 0.75, topN = 20)
-        .orderBy(col("rk"))
-    }),
-
-    "q139_sparse_cosine" -> ((s, dir) => {
-      // all-pairs sparse cosine over tf-weighted 4-gram shingles through
-      // the INVERTED INDEX (the Elsayed/Lin/Oard pairwise-similarity
-      // shape): per-term partial products group-sum to the full dot
-      // product, so pairs form only where a shared shingle exists — no
-      // all-pairs product, recall 1.0 (given the df cap) where LSH
-      // would sample. The df cap drops the Zipf head from the
-      // similarity space BEFORE the pair join — the lever that bounds
-      // per-term fanout at 100 TB.
-      GraftFunctions.register(s)
-      operators.Retrieval.sparseCosinePairs(t(s, dir, "documents"),
-          "doc_id", "text", maxDf = 1000L, threshold = 0.3, shingleN = 4)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q140_rrf_fusion" -> ((s, dir) => {
-      // hybrid retrieval: the lexical BM25 ranking and the dense
-      // exact-cosine ranking for the SAME query (id 0 plays the query —
-      // its text supplies the terms, its embedding the vector; the two
-      // tables share the id space) merged by reciprocal-rank fusion,
-      // the calibration-free way production RAG stacks combine
-      // retrievers. Both inputs are top-k lists, so the fusion itself
-      // is one tiny partial-combined sum — the heavy work stays inside
-      // the retrievers.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val emb = t(s, dir, "embeddings")
-      val lex = operators.Retrieval.bm25(docs, "doc_id", "text",
-          Seq("merge", "sort", "hash"), topN = 30)
-        .select(col("doc_id"), col("rk"))
-      val dense = Similarity.bruteForceTopK(emb,
-          emb.filter(col("vec_id") === 0), k = 30, exact = true)
-        .select(col("neighbor_id").as("doc_id"), col("rk"))
-      operators.Retrieval.rrfFuse(Seq(lex, dense), c = 60, topN = 10)
-        .orderBy(col("rk"))
-    }),
-
-    "q141_edit_join" -> ((s, dir) => {
-      // edit-distance similarity join via PassJoin segment blocking —
-      // character-level record linkage with NO all-pairs product: the
-      // q113-style deterministic fixture derives a short string per doc
-      // (groups of 10 share an md5 base; variants apply one substitution
-      // / deletion / insertion, or two substitutions that must NOT
-      // match at maxDist=1), the real operator finds all pairs within
-      // Levenshtein 1, and the oracle brute-forces the SAME fixture —
-      // a genuine differential, not a replay of the blocking.
-      val docs = t(s, dir, "documents")
-      val base = substring(
-        md5(floor(col("doc_id") / 10).cast("long").cast("string")), 1, 12)
-      val pos = (col("doc_id") % 7 + 2).cast("int")
-      val m = (col("doc_id") % 5).cast("int")
-      val str = when(m === 0, base)
-        .when(m === 1, concat(
-          call_function("substring", base, lit(1), pos - 1), lit("z"),
-          call_function("substring", base, pos + 1, lit(12))))
-        .when(m === 2, call_function("substring", base, lit(1), lit(11)))
-        .when(m === 3, concat(base, lit("q")))
-        .otherwise(concat(lit("zz"),
-          call_function("substring", base, lit(3), lit(10))))
-      operators.EditJoin.editDistancePairs(
-          docs.select(col("doc_id").as("id"), str.as("str")),
-          "id", "str", maxDist = 1)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q142_emb_outliers" -> ((s, dir) => {
-      // embedding-space cleaning gate: vectors whose distance to the
-      // corpus centroid exceeds the exact p99 fence — the prune that
-      // keeps encoder failures out of ANN indexes and clusterings. One
-      // per-dim centroid aggregate broadcast back, map-side DECIMAL
-      // distances, one tiny percentile fence — the corpus never joins
-      // itself.
-      Similarity.centroidOutliers(t(s, dir, "embeddings"),
-          "vec_id", "embedding", pct = 0.99)
-        .orderBy(col("vec_id"))
-    }),
-
-    "q143_weighted_sample" -> ((s, dir) => {
-      // weighted sampling WITHOUT replacement (Efraimidis–Spirakis
-      // A-ES, Gumbel-key form): 25 docs per language, length-weighted,
-      // fully deterministic (md5-derived uniforms — a retry or another
-      // engine draws the identical sample). The per-group top-n rides
-      // the bounded TopKAgg heap, so a language holding half the corpus
-      // still can't funnel one task. Complements q74 (uniform exact-n)
-      // and q88 (global importance resample).
-      Sampling.weightedSample(t(s, dir, "documents"), "lang", "doc_id",
-          col("n_chars").cast("double"), n = 25)
-        .orderBy(col("lang"), col("rk"))
-    }),
-
-    "q144_retrieval_eval" -> ((s, dir) => {
-      // offline ranking-quality certification (TREC methodology): the
-      // exact-cosine retrieval run for 8 label-bearing queries is scored
-      // against label-match relevance — recall@10, MRR, nDCG@10 per
-      // query. The run is top-k and qrels are an eval set, so every
-      // metric join is eval-set-sized regardless of corpus size: this is
-      // the gate an index/tokenizer change must pass before swap-in.
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 8)
-      val run = Similarity.bruteForceTopK(emb, queries, k = 10,
-          exact = true)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"),
-          col("rk"))
-      val qrels = queries
-        .select(col("vec_id").as("query_id"), col("label").as("ql"))
-        .join(emb.select(col("vec_id").as("doc_id"), col("label")),
-          col("ql") === col("label"))
-        .filter(col("query_id") =!= col("doc_id"))
-        .select(col("query_id"), col("doc_id"), lit(1.0).as("rel"))
-      operators.Retrieval.rankingMetrics(run, qrels, k = 10)
-        .orderBy(col("query_id"))
-    }),
-
-    "q145_triangles" -> ((s, dir) => {
-      // triangle census of the co-purchase part graph (parts appearing
-      // together in >= 2 orders — the support gate that keeps random
-      // co-occurrence out of the edge set): count + global clustering
-      // coefficient via degree-ordered orientation (node-iterator++), so
-      // no hub node can explode the wedge join. The oracle counts the
-      // same triangles with the orientation-free id-ordered 3-way join.
-      val li = t(s, dir, "lineitem")
-      val edges = copurchaseEdges(li)
-      operators.Graph.triangleStats(edges)
-    }),
-
-    "q146_gapfill" -> ((s, dir) => {
-      // hourly event series per type, densified: a missing hour becomes
-      // an explicit n=0 row with the linearly interpolated level — what
-      // monitoring/forecast consumers need instead of silently absent
-      // buckets. The spine explodes off a tiny per-key extent aggregate;
-      // windows are per-type (calendar-bounded state).
-      operators.TimeSeries.gapFillHourly(t(s, dir, "events"),
-          "event_type", "ts", "value")
-        .orderBy(col("key"), col("hour"))
-    }),
-
-    "q147_ab_test" -> ((s, dir) => {
-      // two-proportion z-test over a deterministic 50/50 user split (the
-      // q63 md5 idiom — no rand(), a retry or another engine assigns the
-      // identical arms): does arm A's high-value-purchase conversion
-      // (a purchase with value >= 200 — every user purchases SOMETHING,
-      // so raw purchase saturates at 100%) differ from arm B's? One
-      // user-keyed aggregate then one global conditional aggregate —
-      // the readout an experimentation pipeline publishes.
-      val ev = t(s, dir, "events")
-      val units = ev.groupBy(col("user_id"))
-        .agg(max(when(col("event_type") === "purchase"
-            && col("value") >= 200, 1).otherwise(0))
-          .as("converted"))
-        .withColumn("arm",
-          when(substring(md5(col("user_id").cast("string")), 1, 1) < "8",
-            lit("A")).otherwise(lit("B")))
-      operators.Stats.abZTest(units, "arm", "converted")
-    }),
-
-    "q148_profile" -> ((s, dir) => {
-      // one-pass per-column data profile of `orders` (null counts, EXACT
-      // distincts via a single Expand scan, native-order min/max rendered
-      // portably) — the pre-publish data-quality card of §2's warehouse
-      // loads.
-      operators.Stats.columnProfile(t(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority"),
-        (name, c) => name match {
-          case "o_orderdate" => date_format(c, "yyyy-MM-dd HH:mm:ss")
-          case "o_totalprice" =>
-            round(c, 2).cast("decimal(18,2)").cast("string")
-          case _ => c.cast("string")
-        })
-    }),
-
-    "q149_scd2" -> ((s, dir) => {
-      // SCD2 history build from the event changelog: per user, the
-      // event_type state stream collapses to validity intervals
-      // (valid_from/valid_to/is_current/version) — the type-2 dimension
-      // shape the reference's warehouse loads land. Entity-bounded
-      // windows on one user-keyed exchange; ties broken by event_id so
-      // replays are bit-identical.
-      operators.TimeSeries.scd2History(t(s, dir, "events"),
-          "user_id", "ts", "event_type", "event_id")
-        .orderBy(col("user_id"), col("version"))
-    }),
-
-    "q150_containment" -> ((s, dir) => {
-      // directional containment dedup (Broder): |A ∩ B| / |A| over
-      // 3-gram shingle sets through the inverted index — catches partial
-      // copies (doc-inside-doc) that symmetric Jaccard under-scores.
-      // maxDf drops corpus-frequent shingles BEFORE the pair join; the
-      // ratio is an exact integer quotient, so nothing float-sensitive
-      // crosses engines.
-      GraftFunctions.register(s)
-      operators.Retrieval.containmentPairs(t(s, dir, "documents"),
-          "doc_id", "text", shingleN = 3, maxDf = 50, threshold = 0.8)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q151_silhouette" -> ((s, dir) => {
-      // clustering-quality audit: simplified (centroid-based) silhouette
-      // per embedding label — the per-cluster cohesion/separation score
-      // a pipeline publishes for a clustering or labeling run. Centroids
-      // are one tiny per-(label,dim) aggregate assembled into a single
-      // broadcast row; every distance computes map-side against it; the
-      // corpus never shuffles.
-      Similarity.simplifiedSilhouette(t(s, dir, "embeddings"),
-          "vec_id", "embedding", "label")
-        .orderBy(col("label"))
-    }),
-
-    "q152_histogram" -> ((s, dir) => {
-      // equi-depth histogram boundaries (exact interior deciles) for the
-      // three numeric lineitem measures, all in ONE scan — the
-      // distribution card that turns q148's min/max profile into
-      // something a skew/pricing analysis can read.
-      operators.Stats.equiDepthHistogram(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount"), buckets = 10)
-    }),
-
-    "q153_kcore" -> ((s, dir) => {
-      // 3-core of the support>=2 co-purchase graph after 10 explicit
-      // peel rounds (fixpoint at this sf by the duckdb probe; the round
-      // count is a deterministic parameter, not a convergence race) —
-      // the dense-subgraph extractor that isolates clique-ish structure
-      // the q145 census only counts.
-      val li = t(s, dir, "lineitem")
-      val edges = copurchaseEdges(li)
-      operators.Graph.kCore(edges, k = 3, rounds = 10)
-        .orderBy(col("node"))
-    }),
-
-    "q154_label_prop" -> ((s, dir) => {
-      // semi-supervised label propagation: 20% of parts carry their
-      // brand as a seed; 3 majority-vote rounds spread labels over the
-      // support>=2 co-purchase graph (min-label tie-break, immutable
-      // seeds) — metadata back-fill from graph neighborhoods, fully
-      // deterministic and replayable.
-      val li = t(s, dir, "lineitem")
-      val edges = copurchaseEdges(li)
-      val seeds = t(s, dir, "part")
-        .filter(col("p_partkey") % 5 === 0)
-        .select(col("p_partkey").as("node"), col("p_brand").as("label"))
-      operators.Graph.labelPropagation(edges, seeds, rounds = 3)
-        .orderBy(col("node"))
-    }),
-
-    "q155_ctfidf" -> ((s, dir) => {
-      // c-TF-IDF cluster naming (the BERTopic scoring): each source's
-      // 5 most characteristic terms — one corpus-wide (class, term)
-      // exchange, vocab-sized everything after.
-      TextAnalysis.cTfIdf(t(s, dir, "documents"), "source", "text",
-          topK = 5)
-        .orderBy(col("class"), col("rk"))
-    }),
-
-    "q156_psi_drift" -> ((s, dir) => {
-      // PSI drift of the event value distribution, first half of the
-      // month (reference) vs the rest (current): reference-decile bins
-      // broadcast, slices bucketed map-side, add-one smoothing — the
-      // model-monitoring readout between corpus snapshots.
-      val ev = t(s, dir, "events")
-      val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
-      operators.Stats.psiDrift(
-        ev.filter(col("ts") < cutoff),
-        ev.filter(col("ts") >= cutoff), "value", buckets = 10)
-    }),
-
-    "q157_theilsen" -> ((s, dir) => {
-      // Theil–Sen robust ingest-volume trend per event type: median of
-      // all pairwise hourly slopes (bursts can't fool it the way they
-      // fool least squares). The pair set is quadratic in HOURS —
-      // calendar-bounded, independent of corpus size.
-      operators.TimeSeries.theilSenTrend(t(s, dir, "events"),
-          "event_type", "ts")
-        .orderBy(col("key"))
-    }),
-
-    "q158_seasonal" -> ((s, dir) => {
-      // calendar-seasonal anomaly scan: each (type, hour-of-day) slot
-      // learns its own mean/sigma from exact integer sums; hours beyond
-      // 3 sigma OF THEIR SLOT are flagged — "is 3 AM traffic weird for
-      // 3 AM". Profile is types x 24 rows, broadcast back.
-      operators.TimeSeries.seasonalAnomalies(t(s, dir, "events"),
-          "event_type", "ts", z = 3.0)
-        .orderBy(col("key"), col("hour"))
-    }),
-
-    "q159_cusum" -> ((s, dir) => {
-      // CUSUM level-shift scan per event type: the sequential
-      // max(0, S + z - k) recurrence, computed as a prefix-sum +
-      // prefix-min window identity over EXACT decimals — catches
-      // sustained drifts the per-hour 3-sigma gate (q158) never trips.
-      operators.TimeSeries.cusumChangepoints(t(s, dir, "events"),
-          "event_type", "ts", slack = 0.5, threshold = 4.0)
-        .orderBy(col("key"), col("hour"))
-    }),
-
-    "q160_active_users" -> ((s, dir) => {
-      // DAU / trailing-7-day WAU / stickiness per day: user-days fan
-      // out map-side to the days they cover (bounded explode), then one
-      // (user, day) distinct — no per-day rescan, no range self-join.
-      operators.TimeSeries.activeUsers(t(s, dir, "events"), "ts",
-          "user_id", window = 7)
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("dau"), col("wau"), col("stickiness"))
-        .orderBy(col("day"))
-    }),
-
-    "q161_linkpred" -> ((s, dir) => {
-      // Adamic-Adar link prediction over the support>=2 co-purchase
-      // part graph (q145's edge set): non-edges scored by
-      // sum 1/ln(deg) over common neighbors; candidates form only
-      // through wedges, hub centers capped (maxDegree).
-      val li = t(s, dir, "lineitem")
-      val edges = copurchaseEdges(li)
-      operators.Graph.adamicAdar(edges, maxDegree = 64, topN = 100)
-    }),
-
-    "q162_auc" -> ((s, dir) => {
-      // rank-sum (Mann-Whitney) ROC AUC of a per-vector score against
-      // a binary label — the threshold-free gate readout: score = the
-      // vector's first component, positive = even cluster label. Bins
-      // partial-combine; the prefix window rides the bounded bin table.
-      val emb = t(s, dir, "embeddings")
-      operators.Stats.aucRankSum(
-        emb.select(element_at(col("embedding"), 1).as("score"),
-          (col("label") % 2 === 0).as("pos")),
-        "score", "pos")
-    }),
-
-    "q163_basket_lift" -> ((s, dir) => {
-      // pairwise association rules over order baskets: support /
-      // directional confidence / lift, minCount >= 3, top 100 by lift.
-      // Pair fanout is basket-size-bounded; item counts broadcast.
-      operators.Stats.associationLift(t(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey", minCount = 3, topN = 100)
-    }),
-
-    "q164_rfm" -> ((s, dir) => {
-      // RFM lifecycle segmentation: per-customer recency / frequency /
-      // monetary scored 1-5 against exact population quintile fences
-      // (broadcast, assigned map-side), rolled up to segment cells.
-      operators.Stats.rfmSegments(t(s, dir, "orders"), "o_custkey",
-        "o_orderdate", "o_totalprice")
-    }),
-
-    "q165_kappa" -> ((s, dir) => {
-      // chance-corrected agreement between two heuristic labelers over
-      // the same docs (quality >= 0.3 vs langid == 'en'): the
-      // labeling-pipeline consistency readout. One contingency-table
-      // exchange; everything after is labels^2-sized.
-      val docs = t(s, dir, "documents")
-      operators.Stats.cohenKappa(
-        docs.select(
-          (TextAnalysis.qualityScore(col("text")) >= 0.3).as("a"),
-          (TextAnalysis.langId(col("text")) === "en").as("b")),
-        "a", "b")
-    }),
-
-    "q166_calibration" -> ((s, dir) => {
-      // calibration audit of the q91-style trained quality classifier:
-      // reliability bins + ECE + Brier — does p=0.8 MEAN 80%? The
-      // oracle re-trains the 8-step GD via the unrolled CTE chain and
-      // replays the identical bin algebra.
-      val docs = t(s, dir, "documents")
-      val label = (TextAnalysis.qualityScore(col("text")) >= 0.3)
-      val w = logRegWeightsFor(s, dir, docs, label.cast("double"),
-        iters = 8, eta = 8.0)
-      val scored = operators.QualityClassifier.score(docs, "doc_id",
-        "text", w, extra = Seq(label.as("is_hq")))
-      operators.Stats.calibration(scored, "p", "is_hq", bins = 10)
-    }),
-
-    "q167_gini" -> ((s, dir) => {
-      // Gini concentration of corpus mass over per-doc length: the
-      // inequality monitor ("is half the corpus one source's boiler-
-      // plate?"). Exact integer trapezoid over the bounded length
-      // histogram.
-      operators.Stats.giniConcentration(t(s, dir, "documents"),
-        "n_chars")
-    }),
-
-    "q168_km_retention" -> ((s, dir) => {
-      // Kaplan-Meier retention over (user, event-type) engagement
-      // streams: lifetime = days from first to last occurrence, units
-      // still active in the final week are CENSORED (not churned) —
-      // the right-censoring correction naive retention curves miss.
-      val ev = t(s, dir, "events")
-      operators.TimeSeries.kaplanMeierRetention(
-        ev.select(concat_ws(":", col("user_id"), col("event_type"))
-          .as("unit"), col("ts")),
-        "unit", "ts", censorDays = 7)
-        .orderBy(col("t_days"))
-    }),
-
-    "q169_stl" -> ((s, dir) => {
-      // additive trend/seasonal/residual decomposition of the hourly
-      // event series per type: centered 24h moving average, per-slot
-      // seasonal means of the detrended series, residual remainder.
-      operators.TimeSeries.stlDecompose(t(s, dir, "events"),
-          "event_type", "ts")
-        .orderBy(col("key"), col("hour"))
-    }),
-
-    "q170_benford" -> ((s, dir) => {
-      // Benford first-digit audit of order totals: observed leading-
-      // digit shares vs log10(1 + 1/d) with the chi-square statistic —
-      // the fabricated-data smoke test. Digit extraction rides the
-      // scan via the DECIMAL string rendering (no log10 boundary ulp).
-      operators.Stats.benfordAudit(t(s, dir, "orders"), "o_totalprice")
-    }),
-
-    "q171_bfs_hops" -> ((s, dir) => {
-      // multi-source BFS over the support>=2 co-purchase graph: min hop
-      // distance from the seed parts (key % 101 == 0) out to 3 hops —
-      // the "everything within k links of a known-bad node" expansion.
-      // Per round one edge-keyed join + one partial-combined min.
-      val li = t(s, dir, "lineitem")
-      val edges = copurchaseEdges(li)
-      val nodes = edges.select(col("src").as("node"))
-        .unionAll(edges.select(col("dst").as("node"))).distinct()
-      // part graph: the distance table is dimension-scale -> broadcast
-      operators.Graph.bfsHops(edges,
-          nodes.filter(col("node") % 101 === 0), maxHops = 3,
-          broadcastDist = true)
-        .orderBy(col("node"))
-    }),
-
-    "q172_bloom_join" -> ((s, dir) => {
-      // bloom-pruned selective join: part filtered to p_size = 1 (~2%
-      // of the dim) builds a distributed bloom over its keys; lineitem
-      // rows drop MAP-SIDE before the join shuffle. Result == the plain
-      // join (no false negatives; the join kills false positives) —
-      // the oracle is the unpruned join.
-      functions.GraftFunctions.register(s)
-      val li = t(s, dir, "lineitem")
-      val dim = t(s, dir, "part").filter(col("p_size") === 1)
-      operators.Skew.bloomPrunedJoin(li, dim, "l_partkey", "p_partkey")
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("l_extendedprice").cast("decimal(38,6)"))
-            .cast("double"), 6).as("revenue"))
-        .orderBy(col("p_brand"))
-    }),
-
-    "q173_merge_upsert" -> ((s, dir) => {
-      // changelog compaction (batch MERGE): the customer snapshot folded
-      // with an order-derived change stream — latest (date, orderkey)
-      // event per customer wins, orderkey % 97 events are deletes. One
-      // key exchange, partial-combined max_by, no per-key window sort.
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val ch = t(s, dir, "orders").select(
-        col("o_custkey").as("c_custkey"),
-        concat(lit("upd#"), col("o_orderkey").cast("string"))
-          .as("c_name"),
-        col("o_totalprice").as("c_acctbal"),
-        // NTZ -> session-UTC timestamp -> epoch seconds (= DuckDB epoch)
-        col("o_orderdate").cast("timestamp").cast("long").as("ts"),
-        col("o_orderkey").as("tie"),
-        when(col("o_orderkey") % 97 === 0, "D").otherwise("U").as("op"))
-      operators.SnapshotDiff.applyChangelog(cust, ch, "c_custkey",
-          "ts", "tie", "op", Seq("c_name", "c_acctbal"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    "q174_ppr" -> ((s, dir) => {
-      // personalized PageRank on q107's customer-supplier graph:
-      // teleport only to the seed customers (key % 131 == 0), so rank
-      // reads as proximity-to-seeds — the related-entity score. Same
-      // DECIMAL(38,20)/round(12) bit discipline as q107; the oracle
-      // replays 5 unrolled rounds.
-      // not materialized — runtime exchange reuse covers the identical
-      // union arms (see the q107 measured note)
-      val base = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "lineitem")
-            .select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("c"),
-          concat(lit("s"), col("l_suppkey")).as("p"))
-        .distinct()
-      val edges = base.select(col("c").as("src"), col("p").as("dst"))
-        .unionAll(base.select(col("p").as("src"), col("c").as("dst")))
-      val seeds = t(s, dir, "customer")
-        .filter(col("c_custkey") % 131 === 0)
-        .select(concat(lit("c"), col("c_custkey")).as("node"))
-      // entity graph (customers + suppliers): ranks broadcast, edges
-      // never shuffle; base is distinct and the union arms can't
-      // collide (prefixes differ), so the dedup shuffle is skipped
-      operators.Graph.personalizedPageRank(edges, seeds, iters = 5,
-          broadcastRanks = true, distinctEdges = false)
-        .orderBy(col("node"))
-    }),
-
-    "q175_weighted_median" -> ((s, dir) => {
-      // mass-weighted quartiles of doc length per source: "half this
-      // source's BYTES sit in docs shorter than X" — integer-exact
-      // (100·cumw >= p·W), no interpolation; the histogram bounds
-      // every post-shuffle step.
-      operators.Stats.weightedQuantiles(t(s, dir, "documents"),
-          "source", "n_chars", "n_chars", Seq(25, 50, 75))
-        .orderBy(col("key"), col("pct"))
-    }),
-
-    "q176_contingency" -> ((s, dir) => {
-      // chi-square independence + mutual information between event type
-      // and hour-of-day in ONE contingency pass: the dependence probe
-      // ("is type just a proxy for time?") behind leakage audits.
-      val ev = t(s, dir, "events")
-      operators.Stats.contingencyStats(
-        ev.select(col("event_type").as("a"),
-          hour(col("ts")).cast("int").as("b")),
-        "a", "b")
-    }),
-
-    "q177_pct_rank" -> ((s, dir) => {
-      // percentile-rank (midrank) normalization of doc length over the
-      // bounded value histogram — the scale-free transform for blending
-      // heterogeneous quality signals; the corpus never sorts globally.
-      operators.Stats.percentileRanks(t(s, dir, "documents"), "n_chars")
-        .orderBy(col("v"))
-    }),
-
-    "q178_pareto" -> ((s, dir) => {
-      // 2-D Pareto frontier over (length, quality): "the best-quality
-      // doc at every length budget" — domination decided against a
-      // broadcast suffix-max grid, never a pairwise join; the oracle
-      // brute-forces NOT EXISTS dominance over the same points (a
-      // genuine differential, the q141 pattern).
-      val docs = t(s, dir, "documents")
-      operators.TopK.paretoFrontier(docs, "doc_id", col("n_chars"),
-          TextAnalysis.qualityScore(col("text")))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q179_novelty" -> ((s, dir) => {
-      // per-doc 3-gram novelty vs the src0 reference slice: fraction of
-      // a doc's distinct shingles the reference has never seen — the
-      // diversity-aware sampling signal; the shingle-keyed join is
-      // unhinted (the src0 slice is SF-linear — Heaps-growing shingles),
-      // swap the q90 bloom prefilter when even the shuffle is too wide.
-      functions.GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      TextAnalysis.noveltyVsReference(
-          docs.filter(col("source") =!= "src0"),
-          docs.filter(col("source") === "src0"), "doc_id", "text", n = 3)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy(col("doc_id"))
-    }),
-
-    "q180_vocab_growth" -> ((s, dir) => {
-      // Heaps'-law vocabulary growth over 10 deterministic ingest
-      // batches: new types, cumulative vocab, running type-token ratio
-      // — "is the crawl still adding content or repeating itself".
-      TextAnalysis.vocabGrowth(t(s, dir, "documents"), "doc_id",
-          "text", batches = 10)
-        .orderBy(col("batch"))
-    }),
-
-    "q181_zipf" -> ((s, dir) => {
-      // Zipf rank-frequency least-squares fit over the vocabulary:
-      // natural text sits near slope -1; template/ID corpora don't.
-      // All regression sums in exact DECIMAL over the bounded vocab.
-      TextAnalysis.zipfFit(t(s, dir, "documents"), "text")
-    }),
-
-    "q182_burstiness" -> ((s, dir) => {
-      // Goh-Barabasi burstiness of each user's inter-event gaps:
-      // -1 metronome, 0 Poisson, ->1 bursts — the organic-vs-scheduler
-      // behavioral fingerprint. One entity-keyed exchange.
-      operators.TimeSeries.interEventBurstiness(t(s, dir, "events"),
-          "user_id", "ts")
-        .orderBy(col("entity"))
-    }),
-
-    "q183_scorecard" -> ((s, dir) => {
-      // the end-to-end curation verdict per doc: quality (q31), 3-gram
-      // repetition (q56), language (q32) and length percentile rank
-      // (q177, broadcast join-back) fold into one keep/drop decision —
-      // the headline composition of the per-doc signal family.
-      functions.GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val pr = operators.Stats.percentileRanks(docs, "n_chars")
-        .select(col("v").as("n_chars_v"), col("pct_rank").as("len_pr"))
-      val scored = docs.select(col("doc_id"),
-        TextAnalysis.qualityScore(col("text")).as("quality"),
-        TextAnalysis.dupNgramFrac(col("text"), 3).as("dup3"),
-        (TextAnalysis.langId(col("text")) === "en").as("is_en"),
-        col("n_chars").cast("long").as("n_chars_v"))
-      scored.join(operators.Hints.boundedBroadcast(pr, "value_grid"),
-        Seq("n_chars_v"))
-        .select(col("doc_id"), col("quality"), col("dup3"), col("is_en"),
-          col("len_pr"),
-          (col("quality") >= 0.25 && col("dup3") <= 0.2 && col("is_en")
-            && col("len_pr") >= 0.02 && col("len_pr") <= 0.98).as("keep"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q184_rake" -> ((s, dir) => {
-      // RAKE keyword extraction: each doc's top stopword-free phrase
-      // scored by sum of word degree/frequency — doc-level metadata
-      // enrichment (q155 names clusters; this names documents). All
-      // aggregates and the rank window key on the doc id.
-      TextAnalysis.rakeKeywords(t(s, dir, "documents"), "doc_id",
-          "text")
-        .orderBy(col("doc_id"))
-    }),
-
-    "q185_fd_audit" -> ((s, dir) => {
-      // functional-dependency audit over the order lines: does the
-      // order determine its supplier / part its supplier? The
-      // schema-contract probe before trusting a column as a join key.
-      operators.Stats.fdAudit(t(s, dir, "lineitem"),
-        Seq("l_orderkey" -> "l_suppkey", "l_partkey" -> "l_suppkey",
-          "l_orderkey" -> "l_shipdate"))
-    }),
-
-    "q186_corr_matrix" -> ((s, dir) => {
-      // exact Pearson correlation matrix over the lineitem measures in
-      // ONE pass: DECIMAL-lifted sums, pinned double algebra per pair.
-      operators.Stats.correlationMatrix(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-    }),
-
-    "q187_conv_lag" -> ((s, dir) => {
-      // time-to-convert distribution: each click's NEXT purchase by the
-      // same user within 1h, as a FORWARD as-of join (the backward
-      // asofJoin on negated epoch micros — one user-keyed shuffle +
-      // carry-forward window, never an inequality join), then exact
-      // lag percentiles. Deterministic next-purchase pick via the
-      // event-id tie-break.
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"),
-          (-unix_micros(col("ts"))).as("nts"),
-          col("event_id").as("click_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), (-unix_micros(col("ts"))).as("nts"),
-          unix_micros(col("ts")).as("pts"))
-      val joined = operators.AsOfJoin.asofJoin(clicks, purchases,
-        "user_id", "nts", "nts", Seq("pts"),
-        rightTieBreak = Some("pts"))
-      val lags = joined
-        .select((col("pts") - (-col("nts"))).as("lag_us"))
-        .filter(col("lag_us").isNotNull && col("lag_us") <= 3600000000L)
-        .select(expr("lag_us div 1000000").as("lag_s"))
-      lags.agg(count(lit(1)).as("n_converted"),
-        round(expr("percentile(lag_s, 0.25)"), 6).as("p25"),
-        round(expr("percentile(lag_s, 0.5)"), 6).as("p50"),
-        round(expr("percentile(lag_s, 0.75)"), 6).as("p75"),
-        round(expr("percentile(lag_s, 0.9)"), 6).as("p90"))
-    }),
-
-    "q188_fisher" -> ((s, dir) => {
-      // Fisher class-separation of the labeled embedding space: one
-      // between/within scatter scalar — "do these cluster labels
-      // actually separate" (the global complement of q151's per-point
-      // silhouette). One (label, dim) exchange of exact DECIMAL sums.
-      operators.Similarity.fisherSeparation(t(s, dir, "embeddings"),
-        "label", "embedding")
-    }),
-
-    "q189_langid_eval" -> ((s, dir) => {
-      // langid confusion matrix against the GROUND-TRUTH lang column —
-      // real model evaluation, not a self-consistency check: per
-      // (actual, predicted) counts and per-actual recall; zh has no
-      // profile, so its misclassification pattern is part of the pin.
-      val docs = t(s, dir, "documents")
-      val pred = docs.select(col("lang").as("actual"),
-        TextAnalysis.langId(col("text")).as("predicted"))
-      val cm = pred.groupBy(col("actual"), col("predicted"))
-        .agg(count(lit(1)).as("n"))
-      val tot = cm.groupBy(col("actual"))
-        .agg(sum(col("n")).as("n_actual"))
-      cm.join(operators.Hints.boundedBroadcast(tot, "label_domain"),
-        Seq("actual"))
-        .select(col("actual"), col("predicted"), col("n"),
-          round(col("n").cast("double")
-            / col("n_actual").cast("double"), 6).as("share"))
-        .orderBy(col("actual"), col("predicted"))
-    }),
-
-    "q190_dup_matrix" -> ((s, dir) => {
-      // cross-source duplication matrix: which sources copy from which
-      // — q37's MinHash+LSH near-dup pairs rolled up to unordered
-      // source pairs (the curation readout deciding which feeds to
-      // de-prioritize). Pair generation is the pinned band-key
-      // equi-join; the source attach joins the doc_id->source map twice
-      // UNHINTED — that map is corpus-cardinality (entity-scale at
-      // 100 TB), where a forced broadcast bypasses the size check and
-      // OOMs instead of falling back. The pair side is candidate-
-      // bounded, so the shuffled attach is cheap; AQE still broadcasts
-      // the map when it is genuinely small.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = false)
-      val src = docs.select(col("doc_id"), col("source"))
-      pairs
-        .join(src.select(col("doc_id").as("a_id"),
-          col("source").as("src_a")), Seq("a_id"))
-        .join(src.select(col("doc_id").as("b_id"),
-          col("source").as("src_b")), Seq("b_id"))
-        .groupBy(least(col("src_a"), col("src_b")).as("s1"),
-          greatest(col("src_a"), col("src_b")).as("s2"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy(col("s1"), col("s2"))
-    }),
-
-    "q191_session_stats" -> ((s, dir) => {
-      // the corpus-level engagement card over q22's sessionization:
-      // session count, bounce rate (1-event sessions), exact p50/p90
-      // duration and events-per-session — the rollup a product
-      // dashboard publishes; one user-keyed session pass then a 5-number
-      // global aggregate.
-      val ss = Sessionize.sessionSummary(t(s, dir, "events"), "user_id",
-        "ts", "value", gapSeconds = 1800, tieCols = Seq("event_id"))
-      ss.select(
-          (unix_timestamp(col("session_end"))
-            - unix_timestamp(col("session_start"))).as("dur_s"),
-          col("n_events"))
-        .agg(count(lit(1)).as("n_sessions"),
-          round(sum(when(col("n_events") === 1, 1L).otherwise(0L))
-            .cast("double") / count(lit(1)).cast("double"), 6)
-            .as("bounce_rate"),
-          round(expr("percentile(dur_s, 0.5)"), 6).as("p50_dur_s"),
-          round(expr("percentile(dur_s, 0.9)"), 6).as("p90_dur_s"),
-          round(sum(col("n_events")).cast("double")
-            / count(lit(1)).cast("double"), 6).as("avg_events"))
-    }),
-
-    "q192_nb_langid" -> ((s, dir) => {
-      // multinomial Naive Bayes language classifier trained IN-QUERY on
-      // the q63 md5 train split and evaluated on the held-out 25% — the
-      // fastText-class categorizer step of a curation pipeline (q189
-      // evaluates a FIXED heuristic; this trains the model first).
-      // Training is one vocab-bounded (token, per-class count)
-      // aggregate; scoring is a token-keyed join + per-doc decimal ln
-      // sums; argmax via an explicit smallest-label-tie CASE chain.
-      operators.NaiveBayes.confusionMatrix(t(s, dir, "documents"),
-        "doc_id", "text", "lang")
-    }),
-
-    "q193_readability" -> ((s, dir) => {
-      // Flesch–Kincaid grade readability rollup per source — the
-      // classic readability quality gate (keyword stuffing and garbage
-      // strings land far outside the human band). Counts are pure
-      // regexp projections riding the scan; per-doc grades round(6)
-      // then DECIMAL-accumulate into the per-source mean.
-      TextAnalysis.readabilityBySource(t(s, dir, "documents"),
-        "source", "text")
-    }),
-
-    "q194_lex_diversity" -> ((s, dir) => {
-      // distinct-1/distinct-2 lexical diversity per source (Li et al.
-      // 2016): the share of n-gram occurrences that are distinct types
-      // over each source's pooled token stream — the template/bot-feed
-      // detector at corpus granularity. One (group, gram) partial-
-      // combined exchange per n; exact integer quotients.
-      TextAnalysis.distinctNgramDiversity(t(s, dir, "documents"),
-        "source", "text")
-    }),
-
-    "q195_dp_release" -> ((s, dir) => {
-      // ε-DP histogram release (ε=1, Laplace 1/ε, sensitivity 1): the
-      // per-type event counts as a privacy-preserving publication. The
-      // noise draw is the deterministic salted-md5 inverse-CDF (q143's
-      // uniform idiom) so retries, replays and the oracle draw the
-      // identical noise; only the noisy column is released.
-      operators.Stats.dpNoisyCounts(t(s, dir, "events"), "event_type",
-        epsilon = 1.0)
-    }),
-
-    "q196_ewma_hourly" -> ((s, dir) => {
-      // trailing 24h exponentially-weighted hourly volume per event type
-      // (α=½ truncated + renormalized): the dashboard smoother / drift
-      // alarm level. Powers-of-two weights make the whole computation
-      // exact integer arithmetic with ONE double division — no float
-      // recurrence, no evaluation-order sensitivity.
-      operators.TimeSeries.ewmaHourly(t(s, dir, "events"), "event_type",
-        "ts", window = 24)
-    }),
-
-    "q197_l_diversity" -> ((s, dir) => {
-      // l-diversity audit (l=3) over q130's quasi-identifier tuples with
-      // user_id as the sensitive attribute: a k-anonymous tuple still
-      // leaks if nearly all its rows belong to one user. Same one-tuple-
-      // exchange shape as q130; exact distincts (approx_count_distinct
-      // is the documented 100 TB substitution).
-      operators.Stats.lDiversityAudit(
-        t(s, dir, "events")
-          .select(col("event_type"), hour(col("ts")).as("hb"),
-            floor(col("value") / 10.0).cast("long").as("vb"),
-            col("user_id")),
-        Seq("event_type", "hb", "vb"), "user_id", l = 3)
-    }),
-
-    "q198_pca_top_component" -> ((s, dir) => {
-      // top principal component of the embedding space by power
-      // iteration — the big-data PCA decomposition: one corpus pass
-      // builds the d² second-moment cells (partial-combined pair
-      // stream), the driver runs the O(d²·iters) eigen step on decimal-
-      // exact arithmetic, and the eigenvector lands as a d-row table to
-      // project against map-side. Fixed 5 iterations, sign pinned by
-      // the max-|component| normalization.
-      Similarity.pcaTopComponent(t(s, dir, "embeddings"), "vec_id",
-        "embedding", iters = 5)
-    }),
-
-    "q199_kcenter_coreset" -> ((s, dir) => {
-      // Gonzalez greedy k-center coreset (k=5): diversity-first data
-      // selection — each pick is the point farthest (decimal-exact
-      // squared euclidean, round(6), ties to lowest id) from everything
-      // already kept. k bounded TakeOrdered passes; centers ride as
-      // plan literals.
-      Similarity.kCenterCoreset(t(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 5)
-    }),
-
-    "q200_tokenizer_fertility" -> ((s, dir) => {
-      // tokenizer fertility per language — BPE tokens per whitespace
-      // word under the fixture merge table: the multilingual tokenizer-
-      // equity metric (a language with fertility 2× pays 2× the context
-      // budget per word). Map-side native tokenizer, one lang-keyed
-      // aggregate.
-      GraftFunctions.register(s)
-      t(s, dir, "documents")
-        .select(col("lang"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("nw"),
-          Bpe.tokenCount(col("text"), Bpe.FixtureMerges).cast("long")
-            .as("nb"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("nw")).as("n_words"),
-          sum(col("nb")).as("n_bpe_tokens"),
-          round(sum(col("nb")).cast("double")
-            / sum(col("nw")).cast("double"), 6).as("fertility"))
-        .orderBy(col("lang"))
-    }),
-
-    "q201_setjoin_exact" -> ((s, dir) => {
-      // EXACT all-pairs Jaccard join (AllPairs/PPJoin prefix filter):
-      // every shingle-set pair with J >= 0.5, recall 1.0 GUARANTEED —
-      // the exact counterpart to q37's LSH banding (which trades recall
-      // for speed). Candidates form only where two docs share one of
-      // their rarest shingles; the oracle BRUTE-FORCES the n² space, so
-      // this is a genuine recall differential, not a blocking replay.
-      // Body shared with the sf1-class bench tier ([[largeBenchTier]]).
-      setJoinExactBody(s, t(s, dir, "documents"))
-    }),
-
-    "q202_weighted_paths" -> ((s, dir) => {
-      // Bellman-Ford cheapest-cost reach from the seed parts over the
-      // co-purchase graph, 3 relaxation rounds; edge cost = 1000000 div
-      // support (strong ties are cheap) — the cost-aware sibling of
-      // q171's hop BFS, all integer min-plus arithmetic.
-      val edges = copurchasePairCounts(t(s, dir, "lineitem"))
-        .filter(col("cm") >= 2)
-        .select(col("pa").as("src"), col("pb").as("dst"),
-          floor(lit(1000000L) / col("cm")).cast("long").as("cost"))
-      val nodes = edges.select(col("src").as("node"))
-        .unionAll(edges.select(col("dst").as("node"))).distinct()
-      operators.Graph.weightedShortestPaths(edges,
-          nodes.filter(col("node") % 101 === 0), rounds = 3,
-          broadcastDist = true)
-        .orderBy(col("node"))
-    }),
-
-    "q203_nb_crossval" -> ((s, dir) => {
-      // 4-fold cross-validated accuracy of the q192 NB classifier (md5
-      // hex-quartile folds): whether the single-split accuracy is split
-      // luck. Four one-aggregate trainings; output is fold-sized.
-      operators.NaiveBayes.crossValAccuracy(t(s, dir, "documents"),
-        "doc_id", "text", "lang")
-    }),
-
-    "q204_rm3_retrieval" -> ((s, dir) => {
-      // pseudo-relevance-feedback retrieval (RM3): BM25 for the 2-term
-      // base query, top-5 docs feed back their 3 most frequent
-      // non-query terms (integer tf rank — never a float weight), and
-      // the expanded query reruns BM25 — the classic recall lever of a
-      // lexical stack. Both passes ride q138's broadcast-trim shape.
-      val docs = t(s, dir, "documents")
-      val expanded = operators.Retrieval.rm3ExpandTerms(docs, "doc_id",
-        "text", Seq("spark", "join"), fbDocs = 5, fbTerms = 3)
-      operators.Retrieval.bm25(docs, "doc_id", "text", expanded,
-          topN = 20)
-        .orderBy(col("rk"))
-    }),
-
-    "q205_freq_triples" -> ((s, dir) => {
-      // Apriori level-3: frequent co-purchase triples via the candidate
-      // prune (a triple is only counted if all three sub-pairs are
-      // frequent) — the step beyond q163's pairwise rules; support
-      // verified exactly on the basket join restricted to candidates.
-      operators.Stats.frequentTriples(
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey")),
-        "l_orderkey", "l_partkey", minCount = 2, topN = 50)
-    }),
-
-    "q206_join_card" -> ((s, dir) => {
-      // join-cardinality estimation audit over two FK edges of the star
-      // schema: the textbook uniformity estimate n_a*n_b/max(d_a,d_b)
-      // vs the EXACT join size from the key-count product sum (no join
-      // of row-scale tables ever runs) — the skew diagnostic behind
-      // every cost-based plan choice.
-      val li = t(s, dir, "lineitem")
-      operators.Stats.joinCardinalityAudit(li, "l_orderkey",
-          t(s, dir, "orders"), "o_orderkey", "lineitem->orders")
-        .unionAll(operators.Stats.joinCardinalityAudit(li, "l_partkey",
-          t(s, dir, "part"), "p_partkey", "lineitem->part"))
-        .orderBy(col("edge"))
-    }),
-
-    "q207_neighborhood_fn" -> ((s, dir) => {
-      // per-node 1-/2-ball sizes over the co-purchase graph with a
-      // mergeable HLL 2-ball estimate gated within 3·rsd (the HyperBall
-      // shape: a node's r-ball sketch is the UNION of its neighbors'
-      // (r−1)-ball sketches — at 100 TB only the sketch path runs; the
-      // exact distinct here exists for the q126-style gate).
-      val li = t(s, dir, "lineitem")
-      val edges = copurchaseEdges(li)
-      operators.Graph.neighborhoodFunction(edges, lgK = 12)
-    }),
-
-    "q208_snippets" -> ((s, dir) => {
-      // retrieval snippet generation: for q138's BM25 top-10, an
-      // 8-token window opening 3 tokens before the first query-term hit
-      // — the last mile of a lexical retrieval stack. Position find and
-      // slice are map-side array ops over the 10 result docs only.
-      val docs = t(s, dir, "documents")
-      val terms = Seq("spark", "join", "window")
-      val run = operators.Retrieval.bm25(docs, "doc_id", "text", terms,
-        topN = 10)
-      val pos = least(terms.map(tm =>
-        nullif(array_position(col("tk"), lit(tm)), lit(0L))): _*)
-      val snips = docs
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
-        .select(col("doc_id"), col("tk"), pos.as("p"))
-        .select(col("doc_id"),
-          array_join(slice(col("tk"),
-            greatest(col("p") - lit(3L), lit(1L)).cast("int"), lit(8)),
-            " ").as("snippet"))
-      run.join(snips, Seq("doc_id"))
-        .select(col("rk"), col("doc_id"), col("score"), col("snippet"))
-        .orderBy(col("rk"))
-    }),
-
-    "q209_lsh_recall_cert" -> ((s, dir) => {
-      // the engine certifies its OWN LSH: q37's MinHash banding measured
-      // against q201's exact prefix-filter join as ground truth —
-      // precision/recall of the probabilistic dedup path computed
-      // in-engine on real data (the offline gate an LSH config change
-      // must pass). Both pair sets are bounded; the rollup is 3 scalars.
-      // Body shared with the sf1-class bench tier ([[largeBenchTier]]).
-      lshRecallBody(s, t(s, dir, "documents"))
-    }),
-
-    "q210_card_incremental" -> ((s, dir) => {
-      // q78's corpus card computed through the INCREMENTAL path: each
-      // ingest batch (doc_id % 4) contributes one partial-stats row per
-      // (source [, lang]) — decimal quality sums, token/doc counts,
-      // language counts — and the release card is a pure MERGE of the
-      // partials (the q126 sketch pattern for exact statistics: old
-      // batches are never rescanned). The oracle is the DIRECT
-      // computation — merge must be lossless by construction.
-      val docs = t(s, dir, "documents")
-      val base = docs.select(col("source"), col("lang"),
-        (col("doc_id") % 4).as("batch"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("toks"),
-        TextAnalysis.qualityScore(col("text")).as("q"))
-      val part = base.groupBy(col("source"), col("batch")).agg(
-        count(lit(1)).as("n"), sum(col("toks")).as("tk"),
-        sum(col("q").cast("decimal(38,6)")).as("qsum"))
-      val partLang = base.groupBy(col("source"), col("batch"), col("lang"))
-        .agg(count(lit(1)).as("n"))
-      val bySrc = part.groupBy(col("source")).agg(
-        sum(col("n")).as("n_docs"),
-        sum(col("tk")).cast("long").as("n_tokens"),
-        round(sum(col("qsum")).cast("double") / sum(col("n")), 6)
-          .as("mean_quality"))
-      val lc = partLang.groupBy(col("source"), col("lang"))
-        .agg(sum(col("n")).as("n"))
-      val mx = lc.groupBy(col("source")).agg(max(col("n")).as("mxn"))
-      val top = lc.join(mx, Seq("source")).filter(col("n") === col("mxn"))
-        .groupBy(col("source"))
-        .agg(min(col("lang")).as("top_lang"),
-          max(col("mxn")).cast("long").as("top_lang_n"))
-      bySrc.join(top, Seq("source")).orderBy(col("source"))
-    }),
-
-    "q211_trending_terms" -> ((s, dir) => {
-      // trending terms between ingest batches (doc_id parity as the
-      // old/new slice): add-1-smoothed share ratio
-      // ((c1+1)·(T0+V)) / ((c0+1)·(T1+V)) — exact integer products, ONE
-      // double division, round(6) — gated on c1 >= 5, top 15 movers.
-      // One (token, batch-flag) partial-combined exchange; totals and V
-      // ride a 1-row broadcast.
-      val docs = t(s, dir, "documents")
-      val tok = docs.select((col("doc_id") % 2).as("b"),
-        explode(TextAnalysis.tokens(col("text"))).as("tk"))
-      val counts = tok.groupBy(col("tk")).agg(
-        sum(when(col("b") === 0, 1L).otherwise(0L)).as("c0"),
-        sum(when(col("b") === 1, 1L).otherwise(0L)).as("c1"))
-      val cM = operators.Materializer.Local(counts)
-      val tot = cM.agg(sum(col("c0")).as("t0"), sum(col("c1")).as("t1"),
-        count(lit(1)).as("v"))
-      cM.crossJoin(broadcast(tot))
-        .filter(col("c1") >= 5L)
-        .select(col("tk").as("token"), col("c0"), col("c1"),
-          round(((col("c1") + lit(1L)) * (col("t0") + col("v")))
-            .cast("double")
-            / ((col("c0") + lit(1L)) * (col("t1") + col("v")))
-              .cast("double"), 6).as("ratio"))
-        .orderBy(col("ratio").desc, col("token").asc)
-        .limit(15)
-    }),
-
-    "q212_multitouch_attribution" -> ((s, dir) => {
-      // time-decay multi-touch attribution: every purchase credits ALL
-      // touches in its trailing hour with hyperbolic decay
-      // w = 1800/(1800+Δt) (rational — no libm pow), shares normalized
-      // per purchase by the decimal-exact weight mass; credit rolls up
-      // per touch type. The pair stream rides the q109 (key, time-bin)
-      // interval join — never a raw BETWEEN cross product.
-      val ev = t(s, dir, "events")
-      val touches = ev.filter(col("event_type") =!= "purchase")
-        .select(col("user_id"), col("ts"), col("event_type"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("pid"),
-          (col("ts") - expr("INTERVAL 1 HOUR")).as("w_start"),
-          col("ts").as("w_end"))
-      val pairs = operators.RangeJoin.intervalJoin(touches, purchases,
-          "user_id", "ts", "w_start", "w_end", binSeconds = 3600L)
-        .select(col("event_type"), col("pid"),
-          round(lit(1800.0) / (lit(1800.0)
-            + (unix_timestamp(col("w_end")) - unix_timestamp(col("ts")))
-              .cast("double")), 6).as("w"))
-      val pairsM = operators.Materializer.Local(pairs)
-      val pw = pairsM.groupBy(col("pid"))
-        .agg(sum(col("w").cast("decimal(38,6)")).as("wsum"))
-      pairsM.join(pw, Seq("pid"))
-        .select(col("event_type"),
-          round(col("w") / col("wsum").cast("double"), 6).as("share"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_touches"),
-          round(sum(col("share").cast("decimal(38,6)")).cast("double"), 6)
-            .as("credit"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q213_budget_select" -> ((s, dir) => {
-      // token-budget curation: fill a 10k-token training budget with the
-      // best-quality docs — global greedy by (quality desc, id) realized
-      // as the q66 two-phase bucketed prefix sum (no global sort, no
-      // single-partition window); per-source rollup of what made the cut.
-      val docs = t(s, dir, "documents")
-      val sel = Sampling.budgetSelect(docs, "doc_id",
-        TextAnalysis.tokenCount(col("text")),
-        TextAnalysis.qualityScore(col("text")), budget = 10000L)
-      docs.select(col("doc_id").as("id"), col("source"))
-        .join(sel, Seq("id"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("selected"), 1L).otherwise(0L)).as("n_selected"),
-          sum(when(col("selected"), col("w")).otherwise(0L))
-            .as("tokens_selected"))
-        .orderBy(col("source"))
-    }),
-
-    "q214_golden_record" -> ((s, dir) => {
-      // golden-record entity resolution (the MDM survivorship step):
-      // near-dup clusters (q54's pair graph + pointer-jumping CC) roll
-      // up to one canonical record each — representative = lowest id,
-      // dominant source by the two-step argmax, member/token mass. The
-      // readout a dedup pipeline hands to curation: what each duplicate
-      // family is, who contributes it, and which copy to keep.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
-        bands = 4, shingleN = 3, threshold = 0.5, fast = true)
-      val clusters = Dedup.nearDupClusters(pairs)
-      val mem = clusters.join(
-        docs.select(col("doc_id"), col("source"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("toks")),
-        Seq("doc_id"))
-      val agg1 = mem.groupBy(col("cluster_id")).agg(
-        count(lit(1)).as("n_members"), min(col("doc_id")).as("rep_id"),
-        sum(col("toks")).as("n_tokens"))
-      val sc = mem.groupBy(col("cluster_id"), col("source"))
-        .agg(count(lit(1)).as("n"))
-      val mx = sc.groupBy(col("cluster_id")).agg(max(col("n")).as("mxn"))
-      val top = sc.join(mx, Seq("cluster_id"))
-        .filter(col("n") === col("mxn"))
-        .groupBy(col("cluster_id"))
-        .agg(min(col("source")).as("top_source"),
-          max(col("mxn")).as("n_top_source"))
-      agg1.join(top, Seq("cluster_id")).orderBy(col("cluster_id"))
-    }),
-
-    "q215_cms_mergeable" -> ((s, dir) => {
-      // mergeable Count-Min frequency sketches — the third incremental
-      // sketch next to q126 (HLL: distincts) and q123 (KMV: overlap):
-      // each ingest batch (doc_id parity) builds a depth×width count
-      // matrix; corpus-wide point estimates read the cell-wise SUM of
-      // batch sketches, so old batches are never rescanned. Unlike
-      // q106's binary-sketch gate, the md5-derived bucket hashes make
-      // the estimate itself engine-portable: the hash-checked output
-      // carries the actual OVERCOUNT per heavy token (width 32 is
-      // deliberately small so collisions are real at this vocab and the
-      // est >= exact invariant is exercised, not vacuous).
-      val toks = t(s, dir, "documents")
-        .select((col("doc_id") % 2).as("batch"),
-          explode(operators.TextAnalysis.tokens(col("text"))).as("token"))
-      operators.Stats.cmsHeavyHitters(toks, "token", "batch",
-        depth = 3, width = 32, minShare = 0.002)
-    }),
-
-    "q216_group_ols" -> ((s, dir) =>
-      // per-segment OLS from sufficient statistics: price-on-quantity
-      // slope/intercept/R² per return flag in ONE partial-combined
-      // aggregate — regression-per-group as pure algebra (no per-group
-      // iteration or model state; q186's decimal-exact sum discipline,
-      // one pinned double op order, round(6)).
-      operators.Stats.groupOls(t(s, dir, "lineitem"), "l_returnflag",
-        "l_quantity", "l_extendedprice")),
-
-    "q217_ks_drift" -> ((s, dir) => {
-      // exact two-sample Kolmogorov–Smirnov drift gate on the event
-      // value distribution, first half of the month vs the rest — the
-      // bin-free companion to q156's PSI (same split): values discretize
-      // map-side to cent-scaled longs, both samples partial-combine to
-      // ONE distinct-value histogram, and the CDF walk + argmax ride
-      // that bounded table (the q177 contract).
-      val ev = t(s, dir, "events")
-      val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
-      val scaled = ev.select(
-        floor(col("value") * lit(100)).cast("long").as("sv"), col("ts"))
-      operators.Stats.ksDrift(
-        scaled.filter(col("ts") < cutoff).select(col("sv")),
-        scaled.filter(col("ts") >= cutoff).select(col("sv")), "sv")
-    }),
-
-    "q218_grid_density" -> ((s, dir) => {
-      // grid-density clustering of the embedding space's first two
-      // components — the scalable DBSCAN shape: eps-cells count
-      // map-side, dense cells (>= 6 points) merge via 8-neighbor CC
-      // (pointer-jumping, the q54 machinery on the density-bounded cell
-      // graph), everything else is noise. The density readout over a
-      // corpus no point-to-point join could survive: one cell aggregate
-      // + a broadcast label join back. cluster_id = min member vec_id;
-      // the noise row is cluster_id = -1.
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        element_at(col("embedding"), 1).as("x"),
-        element_at(col("embedding"), 2).as("y"))
-      val asg = operators.Similarity.gridDensityClusters(
-        emb, "vec_id", "x", "y", eps = 0.03, minPts = 6L)
-      asg.groupBy(coalesce(col("ck"), lit(-1L)).as("g"))
-        .agg(min(col("pid")).as("rep"),
-          countDistinct(col("cx"), col("cy")).as("n_cells"),
-          count(lit(1)).as("n_points"))
-        .select(when(col("g") === lit(-1L), lit(-1L))
-            .otherwise(col("rep")).as("cluster_id"),
-          col("n_cells"), col("n_points"))
-        .orderBy(col("cluster_id"))
-    }),
-
-    "q219_partition_audit" -> ((s, dir) =>
-      // partition-load audit before committing a shuffle/bucket layout:
-      // hash-simulate user_id into 8 partitions and report per-partition
-      // row/key mass + load ratio vs uniform — the "how bad is the worst
-      // task" scout (q119 salts what this flags). One key-keyed
-      // partial-combined count; assignment rides the bounded key table.
-      operators.Skew.partitionSkewAudit(t(s, dir, "events"), "user_id",
-        nParts = 8)),
-
-    "q220_residual_outliers" -> ((s, dir) => {
-      // regression-residual anomaly gate: per source, fit
-      // n_chars ~ tokens (R² ≈ 0.99 on this corpus) from q216's
-      // sufficient statistics and flag docs breaking their source's
-      // trend by > 2·RMSE — formatting anomalies (minified/duplicated
-      // whitespace, binary-ish payloads) found as one aggregate + one
-      // broadcast scoring join; no model state, no second fit pass.
-      val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        operators.TextAnalysis.tokenCount(col("text")).cast("long")
-          .as("toks"),
-        col("n_chars"))
-      operators.Stats.olsResidualOutliers(d, "source", "toks", "n_chars",
-          keepCols = Seq("doc_id"), kSigma = 2.0)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q221_ks_by_segment" -> ((s, dir) => {
-      // q217's KS drift per SEGMENT: one statistic per event type
-      // between the month's first half and the rest — the monitor
-      // readout that names which segment's value distribution moved.
-      // Same single histogram exchange, but the CDF walk is a window
-      // PARTITIONED BY the group (parallel across segments, no global
-      // sort); the per-group argmax joins back as a broadcast.
-      val ev = t(s, dir, "events")
-      val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
-      val scaled = ev.select(col("event_type"),
-        floor(col("value") * lit(100)).cast("long").as("sv"), col("ts"))
-      operators.Stats.ksDriftByGroup(
-        scaled.filter(col("ts") < cutoff)
-          .select(col("event_type"), col("sv")),
-        scaled.filter(col("ts") >= cutoff)
-          .select(col("event_type"), col("sv")),
-        "event_type", "sv")
-    }),
-
-    "q222_embedding_drift" -> ((s, dir) => {
-      // embedding-distribution drift between ingest batches — the third
-      // modality in the drift family (tokens: q117 KL; values:
-      // q156/q217/q221; embeddings: HERE): per-batch mean vector from
-      // ONE (batch, dim) decimal-exact aggregate, consecutive-batch
-      // cosine with DECIMAL-accumulated products so aggregation order
-      // can't flip a bit. The corpus exchanges batches×dims partial
-      // sums; everything after is cell-table-sized. On real corpora the
-      // batch mean is dominated by the corpus mean (cosine ≈ 1, drops
-      // under drift); these synthetic random batches read as near-zero
-      // noise cosines — the pinned readout either way.
-      val cells = t(s, dir, "embeddings")
-        .select((col("vec_id") % 4).as("batch"),
-          posexplode(col("embedding")))
-        .select(col("batch"), col("pos").as("dim"),
-          round(col("col").cast("double"), 6).cast("decimal(15,6)")
-            .as("v"))
-        .groupBy(col("batch"), col("dim"))
-        .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-        .select(col("batch"), col("dim"),
-          (col("sv").cast("double") / col("n").cast("double")).as("md"),
-          col("n"))
-      val a = cells.select(col("batch").as("bf"), col("dim"),
-        col("md").as("ma"), col("n").as("n_from"))
-      val b = cells.select((col("batch") - 1).as("bf"), col("dim"),
-        col("md").as("mb"), col("n").as("n_to"))
-      def dec(c: Column) = round(c, 15).cast("decimal(20,15)")
-      a.join(operators.Hints.boundedBroadcast(b, "batch_dim_grid"), Seq("bf", "dim"))
-        .groupBy(col("bf"))
-        .agg(max(col("n_from")).as("n_from"), max(col("n_to")).as("n_to"),
-          sum(dec(col("ma") * col("mb"))).as("dot"),
-          sum(dec(col("ma") * col("ma"))).as("na"),
-          sum(dec(col("mb") * col("mb"))).as("nb"))
-        .select(col("bf").as("batch_from"),
-          (col("bf") + lit(1L)).as("batch_to"),
-          col("n_from"), col("n_to"),
-          round(col("dot").cast("double")
-            / (sqrt(col("na").cast("double"))
-              * sqrt(col("nb").cast("double"))), 6).as("cosine"))
-        .orderBy(col("batch_from"))
-    }),
-
-    "q226_modularity" -> ((s, dir) => {
-      // community-quality gate over q154's label-prop communities on the
-      // support>=2 co-purchase graph: Newman per-community modularity —
-      // is each brand community denser than a degree-preserving random
-      // rewiring would make it? Edge-set-only algebra: one edge pass for
-      // m/degrees, two keyed joins for intra-edges, a 1-row broadcast
-      // for m; contributions are exact-integer until one pinned double.
-      val li = t(s, dir, "lineitem")
-      val edges = copurchaseEdges(li)
-      val seeds = t(s, dir, "part")
-        .filter(col("p_partkey") % 5 === 0)
-        .select(col("p_partkey").as("node"), col("p_brand").as("label"))
-      val labels = operators.Graph.labelPropagation(edges, seeds,
-        rounds = 3)
-      operators.Graph.modularityByCommunity(edges, labels)
-        .orderBy(col("community"))
-    }),
-
-    "q229_unseen_vocab" -> ((s, dir) => {
-      // how much vocabulary has each source NOT shown yet — the corpus
-      // coverage readout that says whether more crawling of a feed will
-      // surface new tokens: Good–Turing missing mass p0 = N1/N (Gale &
-      // Sampson 1995) and the bias-corrected Chao1 richness estimate
-      // V + N1*(N1-1)/(2*(N2+1)) (Chao 1984) from the
-      // frequency-of-frequencies. Species = trigram word shingles (the
-      // q71 span algebra — token vocab is too small on this corpus to
-      // have a tail; span space has a real hapax mass). ONE
-      // (source, shingle) partial-combined exchange; everything after
-      // is source-sized. Exact integer counts; the two derived values
-      // are single pinned double divisions + round(6).
-      GraftFunctions.register(s)
-      val tk = t(s, dir, "documents").select(col("source"),
-        explode(operators.TextAnalysis.shingles(col("text"), 3))
-          .as("term"))
-      tk.groupBy(col("source"), col("term"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).cast("long").as("vocab"),
-          sum(col("c")).cast("long").as("n_tokens"),
-          sum(when(col("c") === 1, 1L).otherwise(0L)).cast("long")
-            .as("n1"),
-          sum(when(col("c") === 2, 1L).otherwise(0L)).cast("long")
-            .as("n2"))
-        .select(col("source"), col("vocab"), col("n_tokens"),
-          col("n1"), col("n2"),
-          round(col("n1").cast("double")
-            / col("n_tokens").cast("double"), 6).as("missing_mass"),
-          round(col("vocab").cast("double")
-            + (col("n1") * (col("n1") - lit(1L))).cast("double")
-              / ((col("n2") + lit(1L)) * lit(2L)).cast("double"), 6)
-            .as("chao1"))
-        .orderBy(col("source"))
-    }),
-
-    "q227_woe_iv" -> ((s, dir) => {
-      // weight-of-evidence / information-value feature screening (the
-      // credit-scoring standard, Siddiqi 2006): how strongly do cheap
-      // engine-computable features (length bin, chars-per-token bin)
-      // separate English from non-English docs. Map-side binning, one
-      // (feature, bin) partial-combined count, per-feature totals and IV
-      // join back on the bounded bin table. Laplace 0.5 smoothing keeps
-      // empty cells finite; shares/ln are pinned-op-order doubles; the
-      // IV sum accumulates round(9) DECIMALs so partial-agg order can't
-      // flip a bit.
-      val docs = t(s, dir, "documents")
-      val base = docs
-        .withColumn("toks",
-          operators.TextAnalysis.tokenCount(col("text")).cast("long"))
-        .select((col("lang") === "en").as("good"),
-          expr("CAST(least(n_chars DIV 100, 5) AS BIGINT)")
-            .as("len_bin"),
-          expr("CAST(least(greatest((n_chars * 10)" +
-            " DIV greatest(toks, 1) - 50, 0), 9) AS BIGINT)")
-            .as("wordlen_bin"))
-      val rows = base.select(lit("len_bin").as("feature"),
-          col("len_bin").as("bin"), col("good"))
-        .unionAll(base.select(lit("wordlen_bin").as("feature"),
-          col("wordlen_bin").as("bin"), col("good")))
-      val cnt = rows.groupBy(col("feature"), col("bin"))
-        .agg(sum(when(col("good"), 1L).otherwise(0L)).cast("long")
-            .as("n_good"),
-          sum(when(col("good"), 0L).otherwise(1L)).cast("long")
-            .as("n_bad"))
-      val tot = cnt.groupBy(col("feature"))
-        .agg(sum(col("n_good")).cast("long").as("tg"),
-          sum(col("n_bad")).cast("long").as("tb"))
-      val gs = (col("n_good").cast("double") + lit(0.5)) /
-        (col("tg").cast("double") + lit(0.5))
-      val bs = (col("n_bad").cast("double") + lit(0.5)) /
-        (col("tb").cast("double") + lit(0.5))
-      val scored = cnt.join(tot, Seq("feature"))
-        .select(col("feature"), col("bin"), col("n_good"), col("n_bad"),
-          round(log(gs / bs), 6).as("woe"),
-          round((gs - bs) * log(gs / bs), 9).cast("decimal(38,9)")
-            .as("term"))
-      val iv = scored.groupBy(col("feature"))
-        .agg(round(sum(col("term")).cast("double"), 6).as("iv"))
-      scored.join(iv, Seq("feature"))
-        .select(col("feature"), col("bin"), col("n_good"), col("n_bad"),
-          col("woe"), col("iv"))
-        .orderBy(col("feature"), col("bin"))
-    }),
-
-    "q223_shapley_attribution" -> ((s, dir) => {
-      // exact Shapley-value channel attribution (the data-driven
-      // attribution model): journeys = user-days, channels = the four
-      // non-purchase event types, v(S) = observed conversion rate of
-      // exact-set-S journeys. ONE corpus aggregate collapses events to
-      // the <=2^4-row journey-set table; the subset game is a driver
-      // constant + two broadcast lookups — nothing after the first
-      // exchange scales with data. Completes the attribution family:
-      // q103 last-touch, q212 time-decay, HERE the cooperative-game
-      // credit.
-      val ev = t(s, dir, "events")
-      val j = ev.groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(concat_ws(",", array_sort(collect_set(
-            when(col("event_type") =!= "purchase", col("event_type")))))
-            .as("set_key"),
-          max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("conv"))
-      // touchless journeys (purchase-only days) are excluded: they exist
-      // only BECAUSE they converted, so v(empty) would be a
-      // selection-biased 1.0 baseline dragging every marginal negative;
-      // with them out, v(empty)=0 — the standard simplified-game default
-      val js = j.filter(col("set_key") =!= "")
-        .groupBy(col("set_key"))
-        .agg(count(lit(1)).as("n"), sum(col("conv")).as("conv"))
-      operators.Stats.shapleyAttribution(js,
-        Seq("click", "error", "signup", "view"))
-    }),
-
-    "q225_reshard_audit" -> ((s, dir) =>
-      // the data-motion bill of growing 8 -> 9 shards, BEFORE committing
-      // the reshard: mod-N reshuffles ~8/9 of the corpus; rendezvous
-      // hashing moves only keys whose argmax lands on the new node
-      // (~1/9) — the minimal-disruption argument, measured on this
-      // corpus's real keys. Both assignments are map-side md5
-      // projections; one aggregate; 2-row output.
-      operators.Sharding.reshardAudit(t(s, dir, "documents"), "doc_id",
-          n0 = 8, n1 = 9)
-        .orderBy(col("scheme"))),
-
-    "q224_winnowing_pairs" -> ((s, dir) => {
-      // MOSS-style plagiarism pairs: winnowing fingerprints (k=4-token
-      // shingles, w=4 windows — any shared >=7-token run leaves a shared
-      // fingerprint) selected map-side, stop-fingerprints (df > 100, the
-      // boilerplate guard) dropped on the bounded fingerprint table, then
-      // pair candidates form on a fingerprint EQUI-JOIN — never all
-      // pairs. Where q37's MinHash answers "how similar are these sets",
-      // the winnowing join answers "do they share a literal local run" —
-      // at a ~2/(w+1) sampling rate the corpus never pays full-text
-      // comparison for.
-      GraftFunctions.register(s)
-      val fps = operators.TextAnalysis.winnowingFingerprints(
-        t(s, dir, "documents"), "doc_id", "text", k = 4, w = 4)
-      val fpd = fps.select(col("id"), col("h")).distinct()
-      val keep = fpd.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= 100)
-      val f2 = fpd.join(keep.select(col("h")), Seq("h"))
-      val nf = f2.groupBy(col("id")).agg(count(lit(1)).as("n"))
-      val pr = f2.select(col("h"), col("id").as("doc_a"))
-        .join(f2.select(col("h"), col("id").as("doc_b")), Seq("h"))
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 2)
-      pr.join(nf.select(col("id").as("doc_a"), col("n").as("n_a")),
-          Seq("doc_a"))
-        .join(nf.select(col("id").as("doc_b"), col("n").as("n_b")),
-          Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"), col("n_shared"),
-          col("n_a"), col("n_b"),
-          round(col("n_shared").cast("double")
-            / least(col("n_a"), col("n_b")).cast("double"), 6)
-            .as("containment"))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "q228_ann_recall_sweep" -> ((s, dir) => {
-      // the ANN operating curve: recall@10 vs nprobe over the SAME
-      // persisted IVF-PQ index q77 searches — the in-engine readout an
-      // operator consults before picking the probe budget (the q209
-      // pattern: the engine certifies its own approximate structure
-      // against in-job exact ground truth). One brute-force pass pinned
-      // once; each probe level re-joins the code table only — per-query
-      // work stays probed-cells-only. Gates, not raw floats, cross the
-      // oracle: exact result counts, per-level recall floors, and the
-      // near-monotone ordering with a 10-hit slack (growing the probed
-      // candidate set CAN displace a true neighbor under ADC error, so
-      // exact monotonicity is not a theorem; observed 70/94/101 of 300
-      // at sf0.01, 52/54/59 at sf0.1).
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") < 30)
-      val cb = pqCodebookFor(s, dir, emb)
-      val seeds = emb.filter(col("vec_id") < 8)
-      val idxDir = new java.io.File(
-        s".bench/q77_index_${corpusKey(dir)}").getAbsolutePath
-      val idxPath = ensurePersistedIndex(idxDir, emb.count()) {
-        Similarity.ivfPqIndex(emb, seeds, cb)
-      }
-      val idx = s.read.parquet(idxPath)
-      val exact = operators.Materializer.Local(
-        Similarity.bruteForceTopK(emb, qs, k = 10)
-          .select(col("query_id"), col("neighbor_id")))
-      val per = Seq(1, 2, 4).map { np =>
-        val pq = operators.Materializer.Local(
-          Similarity.ivfPqSearch(idx, qs, seeds, cb, k = 10, nprobe = np)
-            .select(col("query_id"), col("neighbor_id")))
-        val nr = pq.agg(count(lit(1)).cast("long").as("n_results"))
-        val th = pq.join(exact, Seq("query_id", "neighbor_id"))
-          .agg(count(lit(1)).cast("long").as("n_hits"))
-        nr.crossJoin(broadcast(th))
-          .select(lit(np).as("nprobe"), col("n_results"), col("n_hits"))
-      }
-      val u = per.reduce(_ unionAll _)
-      val nq = qs.agg(count(lit(1)).cast("long").as("n_queries"))
-      val h1 = per.head.select(col("n_hits").as("th1"))
-      u.crossJoin(broadcast(nq)).crossJoin(broadcast(h1))
-        .select(col("nprobe"), col("n_queries"), col("n_results"),
-          (col("n_hits") >= when(col("nprobe") === 1, 30L)
-            .when(col("nprobe") === 2, 35L).otherwise(40L))
-            .as("recall_floor_ok"),
-          (col("n_hits") + lit(10L) >= col("th1")).as("monotone_ok"))
-        .orderBy(col("nprobe"))
-    }),
-
-    "q230_quantile_norm" -> ((s, dir) =>
-      // cross-source batch-effect removal: every source's n_chars
-      // distribution is mapped onto the POOLED distribution (quantile
-      // normalization) so downstream length features compare content,
-      // not ingest formatting. Two histogram exchanges + one bounded
-      // window walk on exact-integer quantile keys — the corpus never
-      // sorts globally and no float rank exists anywhere.
-      operators.Stats.quantileNormalize(t(s, dir, "documents"),
-        "source", "n_chars")),
-
-    "q231_target_encoding" -> ((s, dir) =>
-      // leakage-free categorical feature for the quality/routing models:
-      // source -> leave-one-out smoothed mean doc length (m=10 toward
-      // the global prior). One dimension-scale aggregate broadcasts
-      // back; the encode is map-side; exact-integer cross products until
-      // one pinned division.
-      operators.Stats.targetEncodeLoo(t(s, dir, "documents"),
-          "source", "n_chars", m = 10L, keepCols = Seq("doc_id"))
-        .select(col("doc_id"), col("source"), col("y"), col("loo_enc"))
-        .orderBy(col("doc_id"))),
-
-    "q232_heldout_xent" -> ((s, dir) =>
-      // the CCNet-style LM quality filter, engine-exact: an add-1 bigram
-      // model trained on the q63 75% train slice scores the HELD-OUT 25%
-      // by cross-entropy per bigram — the model never sees the docs it
-      // scores, so memorized duplicates can't rate themselves fluent.
-      // Token-keyed scoring joins (AQE Zipf-head), DECIMAL ln-sums,
-      // one driver scalar (train vocab).
-      operators.TextAnalysis.bigramCrossEntropy(t(s, dir, "documents"),
-          "doc_id", "text",
-          isTrain = substring(md5(col("doc_id").cast("string")), 1, 1)
-            < lit("c"), alpha = 1.0)
-        .orderBy(col("doc_id"))),
-
-    "q233_simpson_audit" -> ((s, dir) => {
-      // Simpson's-paradox audit: per-segment value~hour OLS slope vs the
-      // pooled slope, flagging segments whose trend REVERSES under
-      // aggregation — the classic warning that a pooled dashboard metric
-      // is confounded by segment mix. Two runs of q216's
-      // sufficient-statistics aggregate (no iteration), pooled row joins
-      // back as a 1-row broadcast; sign tests compare the round(6)
-      // slopes both engines agree on bit-exactly.
-      val ev = t(s, dir, "events").select(col("event_type"),
-        hour(col("ts")).cast("long").as("x"),
-        floor(col("value") * 100).cast("long").as("y"))
-      val per = operators.Stats.groupOls(ev, "event_type", "x", "y")
-        .select(col("grp"), col("n"), col("slope").as("slope_seg"))
-      val pooled = operators.Stats
-        .groupOls(ev.withColumn("all", lit("all")), "all", "x", "y")
-        .select(col("slope").as("slope_pool"))
-      per.crossJoin(operators.Hints.boundedBroadcast(pooled, "single_literal_group"))
-        .select(col("grp").as("segment"), col("n"),
-          col("slope_seg"), col("slope_pool"),
-          (col("slope_seg") * col("slope_pool") < 0).as("sign_flip"),
-          round(col("slope_seg") - col("slope_pool"), 6)
-            .as("slope_delta"))
-        .orderBy(col("segment"))
-    }),
-
-    "q234_burrows_delta" -> ((s, dir) => {
-      // Burrows' Delta stylometry (Burrows 2002): pairwise style
-      // distance between sources over the 30 corpus-wide marker tokens —
-      // mean |z-score difference| of relative marker frequencies, the
-      // classic authorship / same-upstream-generator detector for feed
-      // forensics. One (source, token) exchange; the z-table and every
-      // join after it are marker x source bounded; z = (n·f - Σf)/√(n·Σf²
-      // - (Σf)²) keeps the numerator decimal-exact (f pre-rounded to 9)
-      // with one sqrt + one division of pinned-order doubles; pair
-      // deltas accumulate round(9) decimals.
-      val docs = t(s, dir, "documents")
-      // ONE corpus tokenize pass: every downstream table (marker list,
-      // per-source totals, marker counts) derives from the pinned
-      // (source, token) rollup — three consumers, so an unpinned plan
-      // would re-explode the corpus per consumer (the q98/q213 trap)
-      val sw = operators.Materializer.Local(docs
-        .select(col("source"),
-          explode(operators.TextAnalysis.tokens(col("text"))).as("w"))
-        .groupBy(col("source"), col("w"))
-        .agg(count(lit(1)).cast("long").as("cw")))
-      val top = sw.groupBy(col("w")).agg(sum(col("cw")).as("c"))
-        .orderBy(col("c").desc, col("w").asc).limit(30).select(col("w"))
-      val ns = sw.groupBy(col("source"))
-        .agg(sum(col("cw")).cast("long").as("nt"))
-      val cnt = sw.join(broadcast(top), Seq("w"))
-        .select(col("source"), col("w"), col("cw"))
-      val dense = operators.Hints.boundedBroadcast(ns, "category_domain")
-        .crossJoin(broadcast(top))
-        .join(cnt, Seq("source", "w"), "left")
-        .select(col("source"), col("w"),
-          round(coalesce(col("cw"), lit(0L)).cast("double")
-            / col("nt").cast("double"), 9).cast("decimal(18,9)")
-            .as("f9"))
-      val st = dense.groupBy(col("w")).agg(
-        count(lit(1)).cast("long").as("nsrc"),
-        sum(col("f9")).as("s1"),
-        sum((col("f9") * col("f9")).cast("decimal(38,18)")).as("s2"))
-      // st is one row per marker (the 30-token panel): dense's left
-      // join can only preserve the (source x marker) grid's row count
-      val z = dense.join(
-          operators.Hints.boundedBroadcast(st, "marker_panel"), Seq("w"))
-        .withColumn("nd", col("nsrc").cast("double"))
-        .withColumn("num", col("nd") * col("s2").cast("double")
-          - col("s1").cast("double") * col("s1").cast("double"))
-        .filter(col("num") > 0)
-        .withColumn("z", (col("nd") * col("f9").cast("double")
-          - col("s1").cast("double")) / sqrt(col("num")))
-      val za = z.select(col("w"), col("source").as("source_a"),
-        col("z").as("za"))
-      val zb = z.select(col("w"), col("source").as("source_b"),
-        col("z").as("zb"))
-      za.join(zb, Seq("w")).filter(col("source_a") < col("source_b"))
-        .groupBy(col("source_a"), col("source_b"))
-        .agg(count(lit(1)).cast("long").as("n_markers"),
-          round(sum(round(abs(col("za") - col("zb")), 9)
-              .cast("decimal(38,9)")).cast("double")
-            / count(lit(1)).cast("double"), 6).as("delta"))
-        .orderBy(col("source_a"), col("source_b"))
-    }),
-
-    "q235_emd_drift" -> ((s, dir) => {
-      // exact 1-D earth-mover (Wasserstein-1) drift per segment, same
-      // ref/current split as q217/q221 — the drift family's metric in
-      // VALUE units (how far mass actually moved) where KS is unit-free
-      // (largest CDF gap): EMD = Σ |F_ref - F_cur|·Δv over the union
-      // histogram support. Same single histogram exchange + bounded
-      // per-group window walk; each term is the exact integer
-      // |cum_a·n_b - cum_b·n_a|·Δv lifted through DECIMAL(38,0), ONE
-      // double division at the end.
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
-      val e = ev.select(col("event_type").as("g"),
-        floor(col("value") * 100).cast("long").as("v"),
-        when(col("ts") < cutoff, 1L).otherwise(0L).as("is_ref"))
-      val h = e.groupBy(col("g"), col("v"))
-        .agg(sum(col("is_ref")).as("ca"),
-          sum(lit(1L) - col("is_ref")).as("cb"))
-      val wc = Window.partitionBy(col("g")).orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wt = Window.partitionBy(col("g"))
-      val wl = Window.partitionBy(col("g")).orderBy(col("v"))
-      h.withColumn("cuma", sum(col("ca")).over(wc))
-        .withColumn("cumb", sum(col("cb")).over(wc))
-        .withColumn("na", sum(col("ca")).over(wt))
-        .withColumn("nb", sum(col("cb")).over(wt))
-        .withColumn("nv", lead(col("v"), 1).over(wl))
-        .filter(col("nv").isNotNull && col("na") > 0 && col("nb") > 0)
-        .select(col("g"), col("na"), col("nb"),
-          (abs(col("cuma") * col("nb") - col("cumb") * col("na"))
-            * (col("nv") - col("v"))).cast("decimal(38,0)").as("term"))
-        .groupBy(col("g"), col("na"), col("nb"))
-        .agg(round(sum(col("term")).cast("double")
-          / (col("na") * col("nb") * lit(100L)).cast("double"), 6)
-          .as("emd"))
-        .select(col("g"), col("na").cast("long").as("n_ref"),
-          col("nb").cast("long").as("n_cur"), col("emd"))
-        .orderBy(col("g"))
-    }),
-
-    "q236_assortativity" -> ((s, dir) => {
-      // degree assortativity of the support>=2 co-purchase graph
-      // (Newman 2002): do hub parts co-purchase with other hubs
-      // (assortative, community shape) or with leaves (disassortative,
-      // star/spam shape)? Exchangeable symmetrized ends collapse r to
-      // one variance ratio — exact integer sums, one division, no sqrt.
-      val li = t(s, dir, "lineitem")
-      val edges = copurchaseEdges(li)
-      operators.Graph.degreeAssortativity(edges)
-    }),
-
-    "q237_mmr_rerank" -> ((s, dir) => {
-      // MMR diversity re-rank (Carbonell & Goldstein 1998) over q138's
-      // BM25 candidates: greedily pick 5 of 20, each maximizing
-      // 0.7·relevance − 0.3·max-Jaccard-to-picked — the retrieval stack's
-      // redundancy guard (near-dup hits waste result slots). Relevance
-      // and the candidate-pair shingle-Jaccard matrix are computed
-      // distributed (the pair table is 20×20 bounded); the greedy itself
-      // is bounded driver work over collected constants (the
-      // q199/q204 precedent), BigDecimal HALF_UP mirroring Column.round.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val cand = operators.Materializer.Local(
-        operators.Retrieval.bm25(docs, "doc_id", "text",
-          Seq("spark", "join", "window"), k1 = 1.2, b = 0.75, topN = 20))
-      val sh = operators.Materializer.Local(
-        docs.join(broadcast(cand.select(col("doc_id"))), Seq("doc_id"))
-          .select(col("doc_id"), array_distinct(
-            operators.TextAnalysis.shingles(col("text"), 3)).as("sh")))
-      val e = sh.select(col("doc_id"), explode(col("sh")).as("s1"))
-      val inter = e.select(col("s1"), col("doc_id").as("a"))
-        .join(e.select(col("s1"), col("doc_id").as("b")), Seq("s1"))
-        .filter(col("a") < col("b"))
-        .groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).cast("long").as("i"))
-      val szs = sh.select(col("doc_id"), size(col("sh")).cast("long")
-        .as("n"))
-      val sims = inter
-        .join(szs.select(col("doc_id").as("a"), col("n").as("na")),
-          Seq("a"))
-        .join(szs.select(col("doc_id").as("b"), col("n").as("nb")),
-          Seq("b"))
-        .select(col("a"), col("b"),
-          round(col("i").cast("double")
-            / (col("na") + col("nb") - col("i")).cast("double"), 9)
-            .as("sim"))
-      val cands = cand.select(col("doc_id"), col("score")).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-      val simMap = sims.collect()
-        .flatMap(r => Seq((r.getLong(0), r.getLong(1)) -> r.getDouble(2),
-          (r.getLong(1), r.getLong(0)) -> r.getDouble(2))).toMap
-      def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-      import s.implicits._
-      operators.Retrieval.mmrSelect(cands, simMap, k = 5, lambda = 0.7)
-        .map { case (rk, id, rel, ms, m) => (rk, id, rel, r6(ms), r6(m)) }
-        .toDF("rk", "doc_id", "score", "max_sim", "mmr")
-        .orderBy(col("rk"))
-    }),
-
-    "q238_markov_eval" -> ((s, dir) => {
-      // the q124 transition matrix turned into an EVALUATED next-event
-      // predictor: argmax transitions trained on the 75% user hash-split,
-      // accuracy measured on held-out users' transitions — whether the
-      // "what happens next" model carries signal or just class priors.
-      // One user-partitioned lead window (entity-bounded state), two
-      // bounded rollups, the 5-row predictor broadcast back; the argmax
-      // is the two-step max-then-min-label pattern, never max_by.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val steps = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type").as("e1"),
-          (substring(md5(col("user_id").cast("string")), 1, 1) < "c")
-            .as("tr"))
-        .withColumn("e2", lead(col("e1"), 1).over(w))
-        .filter(col("e2").isNotNull)
-      val cnt = steps.filter(col("tr")).groupBy(col("e1"), col("e2"))
-        .agg(count(lit(1)).as("c"))
-      val mx = cnt.groupBy(col("e1")).agg(max(col("c")).as("mc"))
-      val pred = cnt.join(mx, Seq("e1")).filter(col("c") === col("mc"))
-        .groupBy(col("e1")).agg(min(col("e2")).as("predicted"))
-      steps.filter(!col("tr")).groupBy(col("e1"), col("e2"))
-        .agg(count(lit(1)).as("n"))
-        .join(operators.Hints.boundedBroadcast(pred, "event_type_domain"), Seq("e1"), "left")
-        .groupBy(col("e1"),
-          coalesce(col("predicted"), lit("none")).as("predicted"))
-        .agg(sum(col("n")).cast("long").as("n_eval"),
-          sum(when(col("e2") === col("predicted"), col("n"))
-            .otherwise(0L)).cast("long").as("n_correct"))
-        .select(col("e1"), col("predicted"), col("n_eval"),
-          col("n_correct"),
-          round(col("n_correct").cast("double")
-            / col("n_eval").cast("double"), 6).as("accuracy"))
-        .orderBy(col("e1"))
-    }),
-
-    "q239_mutual_info" -> ((s, dir) => {
-      // mutual information / information-gain feature screening — the
-      // entropy-based complement of q227's WOE/IV over the SAME bins:
-      // MI(bin; is_en) = Σ p(b,c)·ln(N·n_bc/(n_b·n_c)), plus the label
-      // entropy and the normalized gain ratio. Exact integer ratios
-      // inside every ln (zero cells never materialize — 0·ln0 = 0 by
-      // construction), terms accumulate as round(9) decimals; one
-      // (feature, bin, label) exchange, bounded rollups after.
-      val docs = t(s, dir, "documents")
-      val base = docs
-        .withColumn("toks",
-          operators.TextAnalysis.tokenCount(col("text")).cast("long"))
-        .select((col("lang") === "en").as("good"),
-          expr("CAST(least(n_chars DIV 100, 5) AS BIGINT)")
-            .as("len_bin"),
-          expr("CAST(least(greatest((n_chars * 10)" +
-            " DIV greatest(toks, 1) - 50, 0), 9) AS BIGINT)")
-            .as("wordlen_bin"))
-      val rows = base.select(lit("len_bin").as("feature"),
-          col("len_bin").as("bin"), col("good"))
-        .unionAll(base.select(lit("wordlen_bin").as("feature"),
-          col("wordlen_bin").as("bin"), col("good")))
-      val c3 = rows.groupBy(col("feature"), col("bin"), col("good"))
-        .agg(count(lit(1)).cast("long").as("nbc"))
-      val nb = c3.groupBy(col("feature"), col("bin"))
-        .agg(sum(col("nbc")).cast("long").as("nb"))
-      val nc = c3.groupBy(col("feature"), col("good"))
-        .agg(sum(col("nbc")).cast("long").as("nc"))
-      val nt = c3.groupBy(col("feature"))
-        .agg(sum(col("nbc")).cast("long").as("nt"))
-      val mi = c3.join(nb, Seq("feature", "bin"))
-        .join(nc, Seq("feature", "good")).join(nt, Seq("feature"))
-        .select(col("feature"),
-          round((col("nbc").cast("double") / col("nt").cast("double"))
-            * log((col("nt") * col("nbc")).cast("double")
-              / (col("nb") * col("nc")).cast("double")), 9)
-            .cast("decimal(38,9)").as("term"))
-        .groupBy(col("feature"))
-        .agg(round(sum(col("term")).cast("double"), 6).as("mi"))
-      val hl = nc.join(nt, Seq("feature"))
-        .select(col("feature"),
-          round((col("nc").cast("double") / col("nt").cast("double"))
-            * log(col("nc").cast("double") / col("nt").cast("double")),
-            9).cast("decimal(38,9)").as("term"))
-        .groupBy(col("feature"))
-        .agg(round(-sum(col("term")).cast("double"), 6).as("h_label"))
-      mi.join(hl, Seq("feature"))
-        .select(col("feature"), col("mi"), col("h_label"),
-          round(col("mi") / col("h_label"), 6).as("ig_ratio"))
-        .orderBy(col("feature"))
-    }),
-
-    "q240_cuped" -> ((s, dir) => {
-      // CUPED variance reduction (Deng et al., WSDM 2013) on the q147
-      // experiment: per-user pre-period spend (first half of the time
-      // range) is the covariate for post-period spend — the adjustment
-      // every experimentation platform applies before reading a revenue
-      // metric, because it shrinks variance without touching the mean
-      // difference. The time midpoint is one scalar aggregate broadcast
-      // back (epoch-microsecond integer math — nothing float crosses
-      // engines); units form in ONE conditional user-keyed aggregate;
-      // Stats.cuped does the rest from decimal sufficient sums.
-      val ev = t(s, dir, "events")
-      val b = ev.agg(min(unix_micros(col("ts"))).as("mn"),
-          max(unix_micros(col("ts"))).as("mx"))
-        .select(expr("(mn + mx) DIV 2").as("mid"))
-      val units = ev.crossJoin(broadcast(b))
-        .groupBy(col("user_id"))
-        .agg(
-          coalesce(sum(when(unix_micros(col("ts")) < col("mid"),
-              col("value").cast("decimal(19,6)"))),
-            lit(0).cast("decimal(19,6)")).cast("double").as("x"),
-          coalesce(sum(when(unix_micros(col("ts")) >= col("mid"),
-              col("value").cast("decimal(19,6)"))),
-            lit(0).cast("decimal(19,6)")).cast("double").as("y"))
-        .withColumn("arm",
-          when(substring(md5(col("user_id").cast("string")), 1, 1) < "8",
-            lit("A")).otherwise(lit("B")))
-      operators.Stats.cuped(units, "arm", "x", "y")
-    }),
-
-    "q241_did" -> ((s, dir) => {
-      // difference-in-differences per event type (Card & Krueger 1994
-      // form): arm = the q147 deterministic user split, period = the
-      // pre/post epoch-midpoint split, DiD = (T̄post − T̄pre) −
-      // (C̄post − C̄pre) of mean event value — the causal readout when
-      // a change ships to one arm mid-window and secular drift must be
-      // netted out. ONE conditional event-type-keyed aggregate (4 cell
-      // sums + 4 cell counts as exact decimals/longs); the 5-row output
-      // derives every mean with one pinned double op order.
-      val ev = t(s, dir, "events")
-      val b = ev.agg(min(unix_micros(col("ts"))).as("mn"),
-          max(unix_micros(col("ts"))).as("mx"))
-        .select(expr("(mn + mx) DIV 2").as("mid"))
-      val base = ev.crossJoin(broadcast(b)).select(col("event_type"),
-        (substring(md5(col("user_id").cast("string")), 1, 1) < "8")
-          .as("tr"),
-        (unix_micros(col("ts")) >= col("mid")).as("post"),
-        col("value").cast("decimal(19,6)").as("v"))
-      val cells = base.groupBy(col("event_type")).agg(
-        sum(when(col("tr") && !col("post"), col("v"))).as("s_t_pre"),
-        sum(when(col("tr") && !col("post"), 1L).otherwise(0L))
-          .as("n_t_pre"),
-        sum(when(col("tr") && col("post"), col("v"))).as("s_t_post"),
-        sum(when(col("tr") && col("post"), 1L).otherwise(0L))
-          .as("n_t_post"),
-        sum(when(!col("tr") && !col("post"), col("v"))).as("s_c_pre"),
-        sum(when(!col("tr") && !col("post"), 1L).otherwise(0L))
-          .as("n_c_pre"),
-        sum(when(!col("tr") && col("post"), col("v"))).as("s_c_post"),
-        sum(when(!col("tr") && col("post"), 1L).otherwise(0L))
-          .as("n_c_post"))
-      def mean(sfx: String) = col(s"s_$sfx").cast("double") /
-        col(s"n_$sfx").cast("double")
-      cells.select(col("event_type"),
-          col("n_t_pre"), col("n_t_post"), col("n_c_pre"),
-          col("n_c_post"),
-          round(mean("t_pre"), 6).as("m_t_pre"),
-          round(mean("t_post"), 6).as("m_t_post"),
-          round(mean("c_pre"), 6).as("m_c_pre"),
-          round(mean("c_post"), 6).as("m_c_post"),
-          round((mean("t_post") - mean("t_pre"))
-            - (mean("c_post") - mean("c_pre")), 6).as("did"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q242_cem" -> ((s, dir) => {
-      // coarsened exact matching ATT (Iacus, King & Porro 2012): users
-      // are coarsened on PRE-period behavior (event-count bin × spend
-      // bin), treated/control compare only inside strata where BOTH
-      // arms appear, and the ATT is the treated-weighted mean of
-      // within-stratum conversion differences — the observational
-      // answer when assignment isn't randomized and raw means are
-      // confounded by activity. One user-keyed conditional aggregate
-      // forms units; strata are a bounded (6×6) rollup; the ATT scalar
-      // re-broadcasts onto the per-stratum readout. Bins use integer
-      // floor-division only, so no float ever picks a bucket.
-      val ev = t(s, dir, "events")
-      val b = ev.agg(min(unix_micros(col("ts"))).as("mn"),
-          max(unix_micros(col("ts"))).as("mx"))
-        .select(expr("(mn + mx) DIV 2").as("mid"))
-      val units = ev.crossJoin(broadcast(b))
-        .groupBy(col("user_id"))
-        .agg(
-          sum(when(unix_micros(col("ts")) < col("mid"), 1L)
-            .otherwise(0L)).as("n_pre"),
-          coalesce(sum(when(unix_micros(col("ts")) < col("mid"),
-              col("value").cast("decimal(19,6)"))),
-            lit(0).cast("decimal(19,6)")).as("v_pre"),
-          max(when(unix_micros(col("ts")) >= col("mid")
-              && col("event_type") === "purchase"
-              && col("value") >= 200, 1).otherwise(0)).as("y"))
-        .select(
-          (substring(md5(col("user_id").cast("string")), 1, 1) < "8")
-            .as("treated"),
-          expr("CAST(least(n_pre DIV 10, 5) AS BIGINT)").as("bin_n"),
-          expr("CAST(least(CAST(floor(v_pre) AS BIGINT) DIV 500, 5)" +
-            " AS BIGINT)").as("bin_v"),
-          col("y"))
-      val cells = units.groupBy(col("bin_n"), col("bin_v")).agg(
-        sum(when(col("treated"), 1L).otherwise(0L)).as("n_t"),
-        sum(when(!col("treated"), 1L).otherwise(0L)).as("n_c"),
-        sum(when(col("treated"), col("y").cast("long")).otherwise(0L))
-          .as("c_t"),
-        sum(when(!col("treated"), col("y").cast("long")).otherwise(0L))
-          .as("c_c"))
-      val matched = col("n_t") > 0 && col("n_c") > 0
-      val diff = col("c_t").cast("double") / col("n_t").cast("double") -
-        col("c_c").cast("double") / col("n_c").cast("double")
-      val att = cells.filter(matched)
-        .select(col("n_t"),
-          round(col("n_t").cast("double") * diff, 9)
-            .cast("decimal(38,9)").as("term"))
-        .agg((sum(col("term")).cast("double")
-          / sum(col("n_t")).cast("double")).as("att_raw"))
-      cells.crossJoin(broadcast(att))
-        .select(col("bin_n"), col("bin_v"), col("n_t"), col("n_c"),
-          when(col("n_t") > 0, round(col("c_t").cast("double")
-            / col("n_t").cast("double"), 6)).as("mean_t"),
-          when(col("n_c") > 0, round(col("c_c").cast("double")
-            / col("n_c").cast("double"), 6)).as("mean_c"),
-          when(matched, round(diff, 6)).as("diff"),
-          matched.as("matched"),
-          round(col("att_raw"), 6).as("att"))
-        .orderBy(col("bin_n"), col("bin_v"))
-    }),
-
-    "q243_jackknife" -> ((s, dir) => {
-      // delete-a-bucket jackknife CI for average order value — the
-      // ratio-of-sums metric (Σ purchase revenue / Σ purchases) whose
-      // naive per-row SE is wrong because users contribute correlated
-      // rows to both sides; 32 md5 buckets at USER grain keep each
-      // user's rows together (the clustering the jackknife exists to
-      // respect). One purchase-filtered user rollup, then
-      // Stats.jackknifeRatio runs entirely on the 32-row bucket table.
-      val units = t(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"))
-        .agg(sum(col("value").cast("decimal(19,6)")).as("rev"),
-          count(lit(1)).as("cnt"))
-      operators.Stats.jackknifeRatio(units, "user_id", "rev", "cnt",
-        b = 32)
-    }),
-
-    "q244_fdr_bh" -> ((s, dir) => {
-      // Benjamini–Hochberg FDR control (B&H 1995) across the 30
-      // (event_type × 4-hour bucket) segment experiments: each segment
-      // runs the q147 two-proportion z-test between the deterministic
-      // arms, the p-value comes from the Abramowitz–Stegun 26.2.17
-      // normal-tail polynomial (identical op order on both engines,
-      // round(9) before any comparison), and the step-up rule rejects
-      // the largest prefix of the p-sorted segments with
-      // p_(i) ≤ i·q/m — the multiple-testing discipline that keeps a
-      // wide segment sweep from crying wolf on q·100% of healthy
-      // segments. One conditional segment-keyed corpus aggregate;
-      // ranks and thresholds live on the bounded m-row table (global
-      // window over ~30 rows — the q177 bounded-table contract).
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val cells = ev.select(col("event_type"),
-          expr("CAST(hour(ts) DIV 4 AS BIGINT)").as("hb"),
-          (substring(md5(col("user_id").cast("string")), 1, 1) < "8")
-            .as("a"),
-          (col("value") >= 100).as("hit"))
-        .groupBy(col("event_type"), col("hb"))
-        .agg(sum(when(col("a"), 1L).otherwise(0L)).as("n_a"),
-          sum(when(!col("a"), 1L).otherwise(0L)).as("n_b"),
-          sum(when(col("a") && col("hit"), 1L).otherwise(0L)).as("x_a"),
-          sum(when(!col("a") && col("hit"), 1L).otherwise(0L)).as("x_b"))
-      val pa = col("x_a").cast("double") / col("n_a").cast("double")
-      val pb = col("x_b").cast("double") / col("n_b").cast("double")
-      val pp = (col("x_a") + col("x_b")).cast("double") /
-        (col("n_a") + col("n_b")).cast("double")
-      val z = (pa - pb) / sqrt(pp * (lit(1.0) - pp) *
-        (lit(1.0) / col("n_a").cast("double")
-          + lit(1.0) / col("n_b").cast("double")))
-      val az = abs(z)
-      val tt = lit(1.0) / (lit(1.0) + lit(0.2316419) * az)
-      val poly = tt * (lit(0.319381530) + tt * (lit(-0.356563782) +
-        tt * (lit(1.781477937) + tt * (lit(-1.821255978) +
-          tt * lit(1.330274429)))))
-      val p = lit(2.0) * (lit(0.3989422804014327) *
-        exp(lit(-0.5) * az * az)) * poly
-      val tested = cells.filter(col("n_a") > 0 && col("n_b") > 0
-          && col("x_a") + col("x_b") > 0
-          && col("x_a") + col("x_b") < col("n_a") + col("n_b"))
-        .select(col("event_type"), col("hb"), col("n_a"), col("n_b"),
-          col("x_a"), col("x_b"), round(z, 6).as("z"),
-          round(p, 9).as("p_value"))
-      val wr = Window.orderBy(col("p_value"), col("event_type"),
-        col("hb"))
-      val ranked = operators.Materializer.Local(
-        tested.withColumn("rank", row_number().over(wr).cast("int")))
-      val m = ranked.agg(count(lit(1)).as("m"))
-      val flagged = ranked.crossJoin(broadcast(m))
-        .withColumn("flag", col("p_value") <=
-          col("rank").cast("double") * lit(0.1) / col("m").cast("double"))
-      val kdf = flagged.agg(max(when(col("flag"), col("rank"))).as("k"))
-      flagged.crossJoin(broadcast(kdf))
-        .select(col("event_type"), col("hb"), col("n_a"), col("n_b"),
-          col("x_a"), col("x_b"), col("z"), col("p_value"), col("rank"),
-          (col("rank") <= coalesce(col("k"), lit(0))).as("rejected"))
-        .orderBy(col("rank"))
-    }),
-
-    "q245_conformal" -> ((s, dir) => {
-      // split-conformal prediction intervals per event type
-      // (Papadopoulos et al. 2002; Lei et al. 2018): predictor = the
-      // train-split mean (integer half-up cents), score = |value−pred|,
-      // q̂ = the EXACT ceil(0.9·(n_cal+1)) order statistic of
-      // calibration scores, coverage audited on the held-out test
-      // split — the distribution-free "this interval covers 90%"
-      // guarantee a serving pipeline publishes next to every point
-      // prediction. ONE corpus exchange builds the (type, split, cents)
-      // histogram: value lives on a cents grid, so the histogram —
-      // and therefore every order statistic downstream — is
-      // grid-bounded at ANY corpus size; no corpus-scale sort exists.
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val hist = operators.Materializer.Local(ev.select(col("event_type"),
-          substring(md5(col("event_id").cast("string")), 1, 1).as("c"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("vc"))
-        .withColumn("split", when(col("c") < "6", "train")
-          .when(col("c") < "b", "cal").otherwise("test"))
-        .groupBy(col("event_type"), col("split"), col("vc"))
-        .agg(count(lit(1)).as("cnt")))
-      val pred = hist.filter(col("split") === "train")
-        .groupBy(col("event_type"))
-        .agg(sum(col("vc") * col("cnt")).as("sv"),
-          sum(col("cnt")).as("nt"))
-        .select(col("event_type"),
-          expr("CAST((2 * sv + nt) DIV (2 * nt) AS BIGINT)")
-            .as("pred_c"),
-          col("nt").as("n_train"))
-      val cal = hist.filter(col("split") === "cal")
-        .join(operators.Hints.boundedBroadcast(pred, "event_type_domain"), Seq("event_type"))
-        .select(col("event_type"),
-          abs(col("vc") - col("pred_c")).as("r"), col("cnt"))
-        .groupBy(col("event_type"), col("r"))
-        .agg(sum(col("cnt")).as("cnt"))
-      val ncal = cal.groupBy(col("event_type"))
-        .agg(sum(col("cnt")).as("n_cal"))
-        .select(col("event_type"), col("n_cal"),
-          expr("CAST((9 * n_cal + 18) DIV 10 AS BIGINT)").as("k"))
-      val wc = Window.partitionBy(col("event_type")).orderBy(col("r"))
-      val qhat = cal.withColumn("cum", sum(col("cnt")).over(wc))
-        .join(operators.Hints.boundedBroadcast(ncal, "event_type_domain"), Seq("event_type"))
-        .filter(col("cum") >= col("k"))
-        .groupBy(col("event_type"), col("n_cal"))
-        .agg(min(col("r")).as("qhat_c"))
-      hist.filter(col("split") === "test")
-        .join(operators.Hints.boundedBroadcast(pred, "event_type_domain"), Seq("event_type"))
-        .join(operators.Hints.boundedBroadcast(qhat, "event_type_domain"), Seq("event_type"))
-        .groupBy(col("event_type"), col("n_train"), col("n_cal"),
-          col("pred_c"), col("qhat_c"))
-        .agg(sum(col("cnt")).as("n_test"),
-          sum(when(abs(col("vc") - col("pred_c")) <= col("qhat_c"),
-            col("cnt")).otherwise(0L)).as("n_covered"))
-        .select(col("event_type"), col("n_train"), col("n_cal"),
-          col("n_test"),
-          (col("pred_c").cast("double") / 100.0).as("pred"),
-          (col("qhat_c").cast("double") / 100.0).as("qhat"),
-          col("n_covered"),
-          round(col("n_covered").cast("double")
-            / col("n_test").cast("double"), 6).as("coverage"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q246_isotonic" -> ((s, dir) => {
-      // isotonic calibration curve (Ayer et al. 1955 minimax ≡ PAV) of
-      // the "longer documents are likelier English" signal: 20 length
-      // bins, monotone non-decreasing fit — the shape-constrained
-      // calibration a ranking/quality pipeline applies when it knows
-      // the direction of an effect but not its form. The corpus pays
-      // one bin-keyed aggregate; Stats.isotonicCalibration runs the
-      // B² minimax entirely on the bounded 20-row bin table.
-      val docs = t(s, dir, "documents")
-      val bins = docs.select(
-          expr("CAST(least(n_chars DIV 50, 19) AS BIGINT)").as("bin"),
-          (col("lang") === "en").cast("long").as("y"))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"))
-      operators.Stats.isotonicCalibration(bins, "bin", "n", "pos")
-    }),
-
-    "q247_spearman" -> ((s, dir) => {
-      // exact tie-corrected Spearman rank correlation between event
-      // value and hour-of-day, per event type — the monotone-trend
-      // readout that is robust to the heavy right tail where Pearson
-      // (q186) is not. Ranks are AVERAGE ranks derived from marginal
-      // histograms, carried as exact integers (2·rank = 2·cum_before
-      // + count + 1, so tie halves never touch a float); value lives
-      // on a cents grid, so the (type, cents, hour) cell table — ONE
-      // corpus exchange — is grid-bounded at any corpus size, and all
-      // rank algebra runs on bounded tables broadcast back onto cells.
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val cells = operators.Materializer.Local(ev.select(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("vc"),
-          expr("CAST(hour(ts) AS BIGINT)").as("hr"))
-        .groupBy(col("event_type"), col("vc"), col("hr"))
-        .agg(count(lit(1)).as("cnt")))
-      val wx = Window.partitionBy(col("event_type")).orderBy(col("vc"))
-      val xh = cells.groupBy(col("event_type"), col("vc"))
-        .agg(sum(col("cnt")).as("cx"))
-        .withColumn("r2x", lit(2L) * (sum(col("cx")).over(wx)
-          - col("cx")) + col("cx") + lit(1L))
-      val wy = Window.partitionBy(col("event_type")).orderBy(col("hr"))
-      val yh = cells.groupBy(col("event_type"), col("hr"))
-        .agg(sum(col("cnt")).as("cy"))
-        .withColumn("r2y", lit(2L) * (sum(col("cy")).over(wy)
-          - col("cy")) + col("cy") + lit(1L))
-      def dec(c: Column) = c.cast("decimal(38,0)")
-      val sums = cells
-        .join(operators.Hints.boundedBroadcast(xh.select(col("event_type"), col("vc"),
-          col("r2x")), "value_grid"), Seq("event_type", "vc"))
-        .join(operators.Hints.boundedBroadcast(yh.select(col("event_type"), col("hr"),
-          col("r2y")), "value_grid"), Seq("event_type", "hr"))
-        .groupBy(col("event_type")).agg(
-          sum(col("cnt")).as("n"),
-          sum(dec(col("cnt")) * dec(col("r2x"))).as("sx"),
-          sum(dec(col("cnt")) * dec(col("r2y"))).as("sy"),
-          sum(dec(col("cnt")) * dec(col("r2x")) * dec(col("r2x")))
-            .as("sxx"),
-          sum(dec(col("cnt")) * dec(col("r2y")) * dec(col("r2y")))
-            .as("syy"),
-          sum(dec(col("cnt")) * dec(col("r2x")) * dec(col("r2y")))
-            .as("sxy"))
-      def v(name: String) = col(name).cast("double")
-      val nD = v("n")
-      val varX = nD * v("sxx") - v("sx") * v("sx")
-      val varY = nD * v("syy") - v("sy") * v("sy")
-      sums.select(col("event_type"), col("n"),
-          when(varX === 0.0 || varY === 0.0, lit(null).cast("double"))
-            .otherwise(round((nD * v("sxy") - v("sx") * v("sy"))
-              / sqrt(varX * varY), 6)).as("rho"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q248_hits" -> ((s, dir) => {
-      // HITS hubs & authorities (Kleinberg 1999) on the DIRECTED
-      // customer→supplier purchase graph — the two-sided centrality a
-      // bipartite behavior graph wants, where q107's PageRank conflates
-      // "buys from many" with "sells to many": customers score as hubs,
-      // suppliers as authorities, 4 fixed mutually-recursive rounds.
-      // Per half-step one edge equi-join against the broadcast score
-      // table + one DECIMAL(38,20) partial-combined sum + one scalar L1
-      // norm — the edge table never shuffles (q107's entity-graph
-      // contract).
-      val base = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "lineitem")
-            .select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      operators.Graph.hits(base, iters = 4)
-    }),
-
-    "q249_t_closeness" -> ((s, dir) => {
-      // t-closeness audit (Li, Li & Venkatasubramanian, ICDE 2007) —
-      // the release gate k-anonymity (q130) and l-diversity (q197)
-      // miss: a QI group can be large AND diverse yet still leak if its
-      // SENSITIVE-value distribution sits far from the global one.
-      // Distance = exact 1-D earth-mover on the ordered cents support
-      // (the numeric-attribute EMD the paper prescribes), normalized by
-      // the attribute range. ONE corpus exchange builds the
-      // (qi, cents) histogram; the global support walk and every
-      // per-group cumulative ride grid-bounded tables; products lift
-      // through DECIMAL/HUGEINT so no count ever overflows.
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val h = operators.Materializer.Local(ev.select(col("event_type"),
-          hour(col("ts")).as("hb"),
-          floor(col("value") * 100).cast("long").as("v"))
-        .groupBy(col("event_type"), col("hb"), col("v"))
-        .agg(count(lit(1)).as("cg")))
-      val wv = Window.orderBy(col("v")) // grid-bounded support
-      val gl = h.groupBy(col("v")).agg(sum(col("cg")).as("call"))
-      val glw = gl
-        .withColumn("cumall", sum(col("call")).over(wv))
-        .withColumn("nv", lead(col("v"), 1).over(wv))
-      val groups = h.groupBy(col("event_type"), col("hb"))
-        .agg(sum(col("cg")).as("ng"))
-      val tot = gl.agg(sum(col("call")).as("ntot"),
-        (max(col("v")) - min(col("v"))).as("rng"))
-      def d19(c: Column) = c.cast("decimal(19,0)")
-      val wg = Window.partitionBy(col("event_type"), col("hb"))
-        .orderBy(col("v"))
-      val terms = glw.crossJoin(operators.Hints.boundedBroadcast(groups, "value_grid"))
-        .join(operators.Hints.boundedBroadcast(h, "value_grid"), Seq("event_type", "hb", "v"), "left")
-        .na.fill(0L, Seq("cg"))
-        .withColumn("cumg", sum(col("cg")).over(wg))
-        .filter(col("nv").isNotNull)
-        .crossJoin(broadcast(tot))
-        .select(col("event_type"), col("hb"), col("ng"), col("ntot"),
-          col("rng"),
-          (abs(d19(col("cumg")) * d19(col("ntot"))
-            - d19(col("cumall")) * d19(col("ng")))
-            * d19(col("nv") - col("v"))).as("term"))
-      terms.groupBy(col("event_type"), col("hb"), col("ng"),
-          col("ntot"), col("rng"))
-        .agg(sum(col("term")).as("st"))
-        .select(col("event_type"), col("hb"), col("ng").as("n"),
-          round(col("st").cast("double") / (col("ng").cast("double")
-            * col("ntot").cast("double") * lit(100.0)), 6).as("emd"),
-          round(col("st").cast("double") / (col("ng").cast("double")
-              * col("ntot").cast("double"))
-            / col("rng").cast("double"), 6).as("emd_norm"))
-        .withColumn("t_violation", col("emd_norm") > 0.02)
-        .orderBy(col("event_type"), col("hb"))
-    }),
-
-    "q250_jl_distortion" -> ((s, dir) => {
-      // Johnson–Lindenstrauss distance-preservation audit (Achlioptas
-      // 2003 ±1 projections): project the 64-d embeddings to 16-d
-      // through the deterministic md5 sign matrix (shared VERBATIM
-      // with the oracle's VALUES table — the shapleySubsets contract)
-      // and histogram the projected/original distance ratio over the
-      // 250 consecutive-id pairs — the "how much does a 4× cheaper
-      // index distort" readout before committing to a projected ANN
-      // layout. Explode + broadcast sign join + DECIMAL(38,20)
-      // partial-combined sums (no nested HOFs, no order sensitivity);
-      // at 100 TB this audit runs on exactly such a bounded pair
-      // sample.
-      import s.implicits._
-      val signs = broadcast(jlSigns.zipWithIndex.flatMap {
-        case (row, k) => row.zipWithIndex.map {
-          case (v, j) => (j, k, v) } }.toSeq.toDF("j", "k", "sv"))
-      val emb = t(s, dir, "embeddings")
-      val pairs = emb.filter(col("vec_id") % 2 === 0)
-        .select(col("vec_id").as("pid"), col("embedding").as("ea"))
-        .join(emb.select((col("vec_id") - 1).as("pid"),
-          col("embedding").as("eb")), Seq("pid"))
-      val dd = operators.Materializer.Local(pairs
-        .select(col("pid"), posexplode(arrays_zip(col("ea"), col("eb"))))
-        .select(col("pid"), col("pos").as("j"),
-          (col("col.ea").cast("double") - col("col.eb").cast("double"))
-            .as("d")))
-      val orig = dd.groupBy(col("pid"))
-        .agg(sum((col("d") * col("d")).cast("decimal(38,20)"))
-          .as("origsq"))
-      val proj = dd.join(signs, Seq("j"))
-        .groupBy(col("pid"), col("k"))
-        .agg(sum((col("d") * col("sv")).cast("decimal(38,20)")).as("p"))
-      val psq = proj.select(col("pid"),
-          (col("p").cast("double") * col("p").cast("double"))
-            .cast("decimal(38,20)").as("p2"))
-        .groupBy(col("pid")).agg(sum(col("p2")).as("projsq"))
-      orig.join(psq, Seq("pid"))
-        .filter(col("origsq").cast("double") > 0.0)
-        .select(sqrt(col("projsq").cast("double")
-          / (lit(16.0) * col("origsq").cast("double"))).as("ratio"))
-        .select(expr("CAST(least(floor(ratio * 10), 19) AS BIGINT)")
-          .as("ratio_bin"), col("ratio"))
-        .groupBy(col("ratio_bin"))
-        .agg(count(lit(1)).as("n_pairs"),
-          round(min(col("ratio")), 6).as("min_ratio"),
-          round(max(col("ratio")), 6).as("max_ratio"))
-        .orderBy(col("ratio_bin"))
-    }),
-
-    "q251_acf" -> ((s, dir) => {
-      // autocorrelation function (lags 1..24) + cumulative Ljung–Box Q
-      // (Ljung & Box 1978) of the gap-filled hourly event-count series
-      // — the seasonality/whiteness readout behind q158/q169: a daily
-      // cycle surfaces as an r₂₄ spike, and Q says whether the series
-      // is distinguishable from noise at all. One corpus exchange to
-      // hourly counts; the gap-filled grid, the lag self-join and the
-      // Q walk all ride the bounded hours table. Deviations are exact
-      // integers (n·y − Σy), products lift through DECIMAL/HUGEINT,
-      // one double division per lag.
-      import org.apache.spark.sql.expressions.Window
-      def d19(c: Column) = c.cast("decimal(19,0)")
-      val ev = t(s, dir, "events")
-      val hc = ev.select(expr("unix_micros(ts) DIV 3600000000").as("hi"))
-        .groupBy(col("hi")).agg(count(lit(1)).as("y"))
-      val bounds = hc.agg(min(col("hi")).as("mn"), max(col("hi")).as("mx"))
-      val grid0 = bounds
-        .select(explode(sequence(col("mn"), col("mx"))).as("hi"))
-        .join(hc, Seq("hi"), "left").na.fill(0L, Seq("y"))
-      val tot = grid0.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
-      val grid = operators.Materializer.Local(
-        grid0.crossJoin(broadcast(tot))
-          .select(col("hi"), col("n"),
-            (col("n") * col("y") - col("sy")).as("dev")))
-      val den = grid.agg(sum(d19(col("dev")) * d19(col("dev")))
-        .as("den"), max(col("n")).as("n2"))
-      val lags = s.range(1, 25).select(col("id").as("lag"))
-      val nums = grid.select(col("hi"), col("dev"))
-        .crossJoin(broadcast(lags))
-        .join(operators.Hints.boundedBroadcast(grid.select(col("hi").as("hi2"),
-          col("dev").as("dev2")), "time_grid"),
-          col("hi2") === col("hi") + col("lag"))
-        .groupBy(col("lag"))
-        .agg(sum(d19(col("dev")) * d19(col("dev2"))).as("num"))
-      val wl = Window.orderBy(col("lag")) // bounded 24-row table
-      nums.crossJoin(broadcast(den))
-        .select(col("lag"), col("n2").cast("double").as("nD"),
-          round(col("num").cast("double") / col("den").cast("double"), 6)
-            .as("r"),
-          round(col("num").cast("double") / col("den").cast("double"), 9)
-            .as("r9"))
-        .withColumn("term", round((col("r9") * col("r9"))
-            / (col("nD") - col("lag").cast("double")), 12)
-          .cast("decimal(38,12)"))
-        .withColumn("cum", sum(col("term")).over(wl))
-        .select(col("lag"), col("r"),
-          round(col("nD") * (col("nD") + 2.0)
-            * col("cum").cast("double"), 6).as("q_lb"))
-        .orderBy(col("lag"))
-    }),
-
-    "q252_fellegi_sunter" -> ((s, dir) => {
-      // Fellegi–Sunter probabilistic record linkage (1969) with the
-      // Winkler EM fit, unsupervised: same-customer order pairs
-      // (the blocking join — linkage never goes all-pairs) reduce to a
-      // 3-bit agreement pattern (priority, status, price-within-10%),
-      // and 5 EM rounds on the 8-row pattern table estimate match
-      // prevalence and per-field m/u rates — the weights a dedup/MDM
-      // pipeline thresholds when no labeled matches exist. The corpus
-      // pays one blocked self-join + one pattern count; EM is bounded.
-      val o = t(s, dir, "orders").select(col("o_orderkey").as("k"),
-        col("o_custkey").as("ck"), col("o_orderpriority").as("pr"),
-        col("o_orderstatus").as("st"), col("o_totalprice").as("tp"))
-      val pat = o.join(o.select(col("k").as("k2"), col("ck").as("ck2"),
-            col("pr").as("pr2"), col("st").as("st2"),
-            col("tp").as("tp2")),
-          col("ck") === col("ck2") && col("k") < col("k2"))
-        .select((col("pr") === col("pr2")).as("same_priority"),
-          (col("st") === col("st2")).as("same_status"),
-          (abs(col("tp") - col("tp2"))
-            < lit(0.1) * greatest(col("tp"), col("tp2")))
-            .as("close_price"))
-        .groupBy(col("same_priority"), col("same_status"),
-          col("close_price"))
-        .agg(count(lit(1)).as("n"))
-      operators.Stats.fellegiSunterEm(pat,
-        Seq("same_priority", "same_status", "close_price"), "n",
-        rounds = 5)
-    }),
-
-    "q253_changepoint" -> ((s, dir) => {
-      // exact single-changepoint localization on the gap-filled hourly
-      // event series (the binary-segmentation step behind every
-      // changepoint tree; cf. Scott & Knott 1974): the split s
-      // maximizing the between-segment SSE reduction
-      // (n·S₁ − s·S)² / (n·s·(n−s)) — where did the level actually
-      // shift, where q159's CUSUM only says that it drifted. One
-      // corpus exchange to hourly counts; prefix sums, the split scan
-      // and the argmax all ride the bounded hours table; the reduction
-      // numerator squares in DECIMAL so no count overflows.
-      import org.apache.spark.sql.expressions.Window
-      def d19(c: Column) = c.cast("decimal(19,0)")
-      val ev = t(s, dir, "events")
-      val hc = ev.select(expr("unix_micros(ts) DIV 3600000000").as("hi"))
-        .groupBy(col("hi")).agg(count(lit(1)).as("y"))
-      val bounds = hc.agg(min(col("hi")).as("mn"),
-        max(col("hi")).as("mx"))
-      val grid0 = bounds
-        .select(explode(sequence(col("mn"), col("mx"))).as("hi"))
-        .join(hc, Seq("hi"), "left").na.fill(0L, Seq("y"))
-      val tot = grid0.agg(count(lit(1)).as("n"), sum(col("y")).as("st"))
-      val wv = Window.orderBy(col("hi")) // bounded hours table
-      val num = col("n") * col("s1") - col("srow") * col("st")
-      // materialized: the bounded scored table feeds both the argmax
-      // aggregate and the winner filter — and under ANSI mode the
-      // winner predicate must NOT combine with srow < n and evaluate
-      // the division on the srow = n row (divide-by-zero)
-      val scored = operators.Materializer.Local(grid0
-        .withColumn("srow", row_number().over(wv).cast("long"))
-        .withColumn("s1", sum(col("y")).over(wv))
-        .crossJoin(broadcast(tot))
-        .filter(col("srow") < col("n"))
-        .select(col("hi"), col("srow"), col("n"), col("st"), col("s1"),
-          round((d19(num) * d19(num)).cast("double")
-            / (col("n").cast("double") * col("srow").cast("double")
-              * (col("n") - col("srow")).cast("double")), 9).as("red9")))
-      val mx = scored.agg(max(col("red9")).as("mr"))
-      scored.crossJoin(broadcast(mx)).filter(col("red9") === col("mr"))
-        .orderBy(col("srow")).limit(1)
-        .select(col("hi").as("split_hi"), col("srow").as("s_pts"),
-          col("n"),
-          round(col("s1").cast("double") / col("srow").cast("double"),
-            6).as("mean1"),
-          round((col("st") - col("s1")).cast("double")
-            / (col("n") - col("srow")).cast("double"), 6).as("mean2"),
-          round(col("red9"), 6).as("reduction"))
-    }),
-
-    "q254_msprt" -> ((s, dir) => {
-      // always-valid sequential testing (the mixture SPRT of Robbins
-      // 1970 as productionized in Johari, Koomen, Pekelis & Walsh,
-      // KDD 2017 "Peeking at A/B Tests"): per DAY, the cumulative
-      // two-sample mean-difference mixture likelihood Λ and the
-      // running always-valid p = min over prefixes of 1/Λ — the
-      // monitor that lets an experimenter look every day WITHOUT
-      // inflating false positives, where q147's fixed-horizon z-test
-      // silently breaks under peeking. One day-keyed corpus rollup of
-      // decimal sufficient sums; every cumulative and the running min
-      // ride the bounded days table (τ² = 100 in value² units).
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val daily = ev.select(
-          expr("unix_micros(ts) DIV 86400000000").as("dy"),
-          (substring(md5(col("user_id").cast("string")), 1, 1) < "8")
-            .as("a"),
-          col("value").cast("decimal(19,6)").as("v"))
-        .groupBy(col("dy"))
-        .agg(sum(when(col("a"), 1L).otherwise(0L)).as("na_d"),
-          sum(when(!col("a"), 1L).otherwise(0L)).as("nb_d"),
-          coalesce(sum(when(col("a"), col("v"))),
-            lit(0).cast("decimal(19,6)")).as("sa_d"),
-          coalesce(sum(when(!col("a"), col("v"))),
-            lit(0).cast("decimal(19,6)")).as("sb_d"),
-          sum((col("v") * col("v")).cast("decimal(38,12)")).as("svv_d"))
-      val wd = Window.orderBy(col("dy"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = daily.select(col("dy"),
-        sum(col("na_d")).over(wd).as("na"),
-        sum(col("nb_d")).over(wd).as("nb"),
-        sum(col("sa_d")).over(wd).as("sa"),
-        sum(col("sb_d")).over(wd).as("sb"),
-        sum(col("svv_d")).over(wd).as("svv"))
-      val naD = col("na").cast("double")
-      val nbD = col("nb").cast("double")
-      val nD = (col("na") + col("nb")).cast("double")
-      val svD = (col("sa") + col("sb")).cast("double")
-      val varP = (nD * col("svv").cast("double") - svD * svD) /
-        (nD * (nD - 1.0))
-      val theta = col("sa").cast("double") / naD -
-        col("sb").cast("double") / nbD
-      val vN = varP * (lit(1.0) / naD + lit(1.0) / nbD)
-      val lam = sqrt(vN / (vN + lit(100.0))) *
-        exp(theta * theta * lit(100.0)
-          / (lit(2.0) * vN * (vN + lit(100.0))))
-      val base = cum.filter(col("na") > 0 && col("nb") > 0)
-        .select(col("dy"), col("na"), col("nb"),
-          round(theta, 6).as("theta"), round(lam, 6).as("lambda"),
-          round(least(lit(1.0), lit(1.0) / lam), 9).as("p_day"))
-      base.withColumn("p_always",
-          round(min(col("p_day")).over(wd), 6))
-        .select(col("dy"), col("na"), col("nb"), col("theta"),
-          col("lambda"), col("p_always"))
-        .orderBy(col("dy"))
-    }),
-
-    "q255_doremi" -> ((s, dir) => {
-      // DoReMi one-step mixture reweighting (Xie et al., NeurIPS 2023,
-      // simplified to its published update rule): each source's new
-      // mixture weight ∝ token-share · exp(η · excess loss), where the
-      // loss is the per-token unigram surprisal (q76's measure rolled
-      // up by source) and the excess is over the pooled corpus — the
-      // domain-reweighting step that upweights sources the current
-      // model finds "hard", the core pretraining-mixture optimization.
-      // ONE (source, term) rollup exchange (the q234 collapse rule);
-      // vocab joins back on the term key; the mirror-descent update and
-      // its normalization ride the bounded source table as round(9)
-      // decimals.
-      val docs = t(s, dir, "documents")
-      val tf = operators.Materializer.Local(docs
-        .select(col("source"),
-          explode(operators.TextAnalysis.tokens(col("text")))
-            .as("term"))
-        .groupBy(col("source"), col("term"))
-        .agg(count(lit(1)).as("tf")))
-      val cnt = tf.groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
-      val tot = tf.agg(sum(col("tf")).as("nt"))
-      val perSrc = tf.join(cnt, Seq("term")).crossJoin(broadcast(tot))
-        .groupBy(col("source"))
-        .agg(sum(col("tf")).cast("long").as("n_tokens"),
-          sum((col("tf").cast("double")
-            * log(col("nt").cast("double") / col("cnt").cast("double")))
-            .cast("decimal(38,6)")).as("ssum"),
-          max(col("nt")).as("nt"))
-      val pooled = perSrc.agg(sum(col("ssum")).as("gsum"),
-        sum(col("n_tokens")).as("gn"))
-      val scored = operators.Materializer.Local(perSrc
-        .crossJoin(broadcast(pooled))
-        .select(col("source"), col("n_tokens"),
-          round(col("n_tokens").cast("double")
-            / col("nt").cast("double"), 6).as("w0"),
-          round(col("ssum").cast("double")
-            / col("n_tokens").cast("double"), 6).as("loss"),
-          round(col("ssum").cast("double")
-              / col("n_tokens").cast("double")
-            - col("gsum").cast("double") / col("gn").cast("double"), 6)
-            .as("excess"))
-        .withColumn("e",
-          round(col("w0") * exp(lit(0.5) * col("excess")), 9)
-            .cast("decimal(19,9)")))
-      val norm = scored.agg(sum(col("e")).as("z"))
-      scored.crossJoin(broadcast(norm))
-        .select(col("source"), col("n_tokens"), col("w0"), col("loss"),
-          col("excess"),
-          round(col("e").cast("double") / col("z").cast("double"), 6)
-            .as("w_new"))
-        .orderBy(col("source"))
-    }),
-
-    "q256_sax_motifs" -> ((s, dir) => {
-      // SAX motif discovery (Lin, Keogh, Lonardi & Chiu 2003): the
-      // gap-filled hourly series is z-normalized, PAA-averaged into
-      // 4-hour segments, discretized into 4 symbols at the standard
-      // Gaussian breakpoints (±0.6745, 0), and every 3-segment word is
-      // counted — "which 12-hour load shapes recur, and how often",
-      // the symbolic complement of q251's ACF. One corpus exchange to
-      // hourly counts; normalization scalars broadcast; PAA, words and
-      // counts all ride the bounded segment table (round(9)-pinned
-      // averages so the symbol comparisons are bit-identical).
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val hc = ev.select(expr("unix_micros(ts) DIV 3600000000").as("hi"))
-        .groupBy(col("hi")).agg(count(lit(1)).as("y"))
-      val bounds = hc.agg(min(col("hi")).as("mn"),
-        max(col("hi")).as("mx"))
-      val grid0 = bounds
-        .select(explode(sequence(col("mn"), col("mx"))).as("hi"))
-        .join(hc, Seq("hi"), "left").na.fill(0L, Seq("y"))
-      def d19(c: Column) = c.cast("decimal(19,0)")
-      val tot = grid0.agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
-        sum(d19(col("y")) * d19(col("y"))).as("syy"))
-      val wv = Window.orderBy(col("hi")) // bounded hours table
-      val nD = col("n").cast("double")
-      val sd = sqrt((nD * col("syy").cast("double")
-        - col("sy").cast("double") * col("sy").cast("double"))
-        / (nD * (nD - 1.0)))
-      val z = (col("y").cast("double")
-        - col("sy").cast("double") / nD) / sd
-      val seg = grid0.crossJoin(broadcast(tot))
-        .withColumn("srow", row_number().over(wv).cast("long"))
-        .select(expr("(srow - 1) DIV 4").as("sg"),
-          round(z, 9).cast("decimal(19,9)").as("zq"))
-        .groupBy(col("sg"))
-        .agg(round(sum(col("zq")).cast("double")
-          / count(lit(1)).cast("double"), 9).as("paa"))
-      val sym = when(col("paa") < -0.6744897501960817, "a")
-        .when(col("paa") < 0.0, "b")
-        .when(col("paa") < 0.6744897501960817, "c").otherwise("d")
-      val ws = Window.orderBy(col("sg")) // bounded segment table
-      seg.select(col("sg"), sym.as("s1"))
-        .withColumn("s2", lead(col("s1"), 1).over(ws))
-        .withColumn("s3", lead(col("s1"), 2).over(ws))
-        .filter(col("s3").isNotNull)
-        .select(col("sg"), concat(col("s1"), col("s2"), col("s3"))
-          .as("word"))
-        .groupBy(col("word"))
-        .agg(count(lit(1)).as("n"), min(col("sg")).as("first_seg"))
-        .orderBy(col("n").desc, col("word"))
-    }),
-
-    "q257_dp_mean" -> ((s, dir) => {
-      // differentially-private mean release per event type (Dwork,
-      // McSherry, Nissim & Smith 2006): clip to [0, C], add
-      // Laplace(C/(n·ε)) noise via the inverse CDF — the numeric
-      // companion to q195's histogram release, carrying the two real
-      // costs a DP release pays: the clipping bias (raw vs clipped
-      // mean) and the noise scale. The "noise" draw is the q195
-      // convention — a deterministic md5 uniform per released cell, so
-      // the release (and the oracle) replays bit-identically; a
-      // production release swaps ONLY the uniform for a secure draw.
-      // One conditional corpus aggregate; everything after is per-type
-      // scalar algebra.
-      val cc = 300.0
-      val ev = t(s, dir, "events")
-      val agg = ev.groupBy(col("event_type")).agg(
-        count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(19,6)")).as("sraw"),
-        sum(least(greatest(col("value"), lit(0.0)), lit(cc))
-          .cast("decimal(19,6)")).as("sclip"))
-      val u = (conv(substring(md5(concat(lit("dp|"),
-          col("event_type"))), 1, 8), 16, 10).cast("double")
-        + lit(0.5)) / lit(4294967296.0)
-      val b = lit(cc) / (col("n").cast("double") * lit(1.0))
-      val lap = -b * signum(u - lit(0.5)) *
-        log(lit(1.0) - lit(2.0) * abs(u - lit(0.5)))
-      agg.select(col("event_type"), col("n"),
-          round(col("sraw").cast("double") / col("n").cast("double"), 6)
-            .as("raw_mean"),
-          round(col("sclip").cast("double") / col("n").cast("double"),
-            6).as("clipped_mean"),
-          round(col("sclip").cast("double") / col("n").cast("double")
-            + lap, 6).as("released_mean"),
-          round(b, 9).as("noise_scale"),
-          lit(1.0).as("epsilon"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q258_hill_tail" -> ((s, dir) => {
-      // Hill tail-index estimate (Hill 1975, peaks-over-threshold
-      // form) per event type: u = the exact 99th-percentile value from
-      // the cents-grid histogram, α̂ = n_tail / Σ ln(x/u) over x > u —
-      // "is this metric heavy-tailed enough that means/winsorizing
-      // (q121) lie", the tail diagnostic behind capping decisions.
-      // ONE corpus exchange to the (type, cents) histogram; the
-      // order statistic and the tail sum ride the grid-bounded table
-      // with round(9) decimal log terms.
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val h = operators.Materializer.Local(ev.select(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("vc"))
-        .groupBy(col("event_type"), col("vc"))
-        .agg(count(lit(1)).as("cnt")))
-      val nt = h.groupBy(col("event_type")).agg(sum(col("cnt")).as("n"))
-        .select(col("event_type"), col("n"),
-          expr("CAST((99 * n + 99) DIV 100 AS BIGINT)").as("k"))
-      val wc = Window.partitionBy(col("event_type")).orderBy(col("vc"))
-      val u = h.withColumn("cum", sum(col("cnt")).over(wc))
-        .join(operators.Hints.boundedBroadcast(nt, "event_type_domain"), Seq("event_type"))
-        .filter(col("cum") >= col("k"))
-        .groupBy(col("event_type"), col("n"))
-        .agg(min(col("vc")).as("uc"))
-      val tail = h.join(operators.Hints.boundedBroadcast(u, "event_type_domain"), Seq("event_type"))
-        .filter(col("vc") > col("uc"))
-        .groupBy(col("event_type"), col("n"), col("uc"))
-        .agg(sum(col("cnt")).as("n_tail"),
-          sum((col("cnt").cast("double")
-            * log(col("vc").cast("double") / col("uc").cast("double")))
-            .cast("decimal(38,9)")).as("slog"))
-      tail.select(col("event_type"), col("n"),
-          (col("uc").cast("double") / 100.0).as("u"),
-          col("n_tail"),
-          round(col("n_tail").cast("double")
-            / col("slog").cast("double"), 6).as("alpha"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q259_power_mde" -> ((s, dir) => {
-      // experiment power analysis per event type (Cohen 1988): the
-      // minimum detectable effect of a 50/50 split at α=5%, power=80%
-      // from the observed outcome variance — the "how long must this
-      // test run" calculator that pairs with q147/q240/q254: an
-      // experimenter sizes the test BEFORE burning two weeks of
-      // traffic. One decimal sufficient-sums aggregate, scalar algebra
-      // after (z constants shared verbatim with the oracle).
-      def d(c: Column) = c.cast("decimal(19,6)")
-      val za = 1.959963984540054; val zb = 0.8416212335729143
-      val agg = t(s, dir, "events").groupBy(col("event_type")).agg(
-        count(lit(1)).as("n"),
-        sum(d(col("value"))).as("sv"),
-        sum(d(col("value")) * d(col("value"))).as("svv"))
-      val nD = col("n").cast("double")
-      val mean = col("sv").cast("double") / nD
-      val varS = (nD * col("svv").cast("double")
-        - col("sv").cast("double") * col("sv").cast("double")) /
-        (nD * (nD - 1.0))
-      val mde = lit(za + zb) * sqrt(varS * (lit(2.0) / (nD / 2.0)))
-      agg.select(col("event_type"), col("n"),
-          round(mean, 6).as("mean"), round(varS, 6).as("variance"),
-          round(mde, 6).as("mde_abs"),
-          round(mde / mean, 6).as("mde_rel"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q260_seq_patterns" -> ((s, dir) => {
-      // frequent sequential patterns (GSP, Srikant & Agrawal 1996):
-      // every user's consecutive event-type TRIGRAM, with support
-      // counted in USERS (a user voting once per pattern, the GSP
-      // sequence-support definition) next to raw occurrences — the
-      // "what do journeys actually look like" complement of q205's
-      // unordered baskets and q124's one-step Markov chain. One
-      // entity-bounded user window (two leads), one pattern rollup;
-      // the pattern space is bounded (|types|³).
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type").as("e1"))
-        .withColumn("e2", lead(col("e1"), 1).over(w))
-        .withColumn("e3", lead(col("e1"), 2).over(w))
-        .filter(col("e3").isNotNull)
-        .select(col("user_id"),
-          concat(col("e1"), lit(">"), col("e2"), lit(">"), col("e3"))
-            .as("pattern"))
-        .groupBy(col("pattern"))
-        .agg(count(lit(1)).as("n_occurrences"),
-          countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("n_users").desc, col("pattern"))
-    }),
-
-    "q261_mann_kendall" -> ((s, dir) => {
-      // Mann–Kendall trend test + Kendall's tau-b (Mann 1945, Kendall
-      // 1975): S = Σ sign(y_j − y_i) over ordered day pairs of the
-      // daily revenue series, tie-corrected variance, the
-      // continuity-corrected z, and tau-b — the nonparametric "is this
-      // metric trending" gate that complements q157's Theil–Sen slope
-      // (which estimates HOW MUCH, not WHETHER). One day-keyed corpus
-      // rollup; the O(days²) pair scan and the tie table ride the
-      // bounded days table (broadcast inequality join).
-      val ev = t(s, dir, "events")
-      val daily = operators.Materializer.Local(ev
-        .select(expr("unix_micros(ts) DIV 86400000000").as("dy"),
-          col("value").cast("decimal(19,6)").as("v"))
-        .groupBy(col("dy")).agg(sum(col("v")).as("y")))
-      val pairs = daily.select(col("dy").as("d1"), col("y").as("y1"))
-        .join(operators.Hints.boundedBroadcast(daily.select(col("dy").as("d2"),
-          col("y").as("y2")), "time_grid"), col("d1") < col("d2"))
-        .agg(sum(when(col("y2") > col("y1"), 1L)
-          .when(col("y2") < col("y1"), -1L).otherwise(0L)).as("s"))
-      val ties = daily.groupBy(col("y")).agg(count(lit(1)).as("t"))
-        .agg(count(lit(1)).as("ng"),
-          sum(col("t") * (col("t") - 1) * (col("t") * 2 + 5)).as("tc"),
-          sum(col("t") * (col("t") - 1)).as("t2"),
-          sum(col("t")).as("n"))
-      val nD = col("n").cast("double")
-      val varS = (nD * (nD - 1.0) * (lit(2.0) * nD + 5.0)
-        - col("tc").cast("double")) / 18.0
-      val sD = col("s").cast("double")
-      val z = when(col("s") > 0, (sD - 1.0) / sqrt(varS))
-        .when(col("s") < 0, (sD + 1.0) / sqrt(varS)).otherwise(lit(0.0))
-      val n0 = nD * (nD - 1.0) / 2.0
-      val tau = sD / sqrt(n0 * (n0 - col("t2").cast("double") / 2.0))
-      pairs.crossJoin(broadcast(ties))
-        .select(col("n").cast("long").as("n"), col("s"),
-          round(varS, 6).as("var_s"), round(z, 6).as("z"),
-          round(tau, 6).as("tau_b"))
-    }),
-
-    "q262_mcnemar" -> ((s, dir) => {
-      // McNemar's paired test with Edwards' continuity correction
-      // (McNemar 1947): are two English-detectors — a length rule and
-      // a chars-per-token rule — SCORED ON THE SAME DOCUMENTS
-      // significantly different? χ² = (|b01−b10|−1)²/(b01+b10) on the
-      // discordant counts, the paired-comparison primitive every
-      // "classifier B beats classifier A" claim needs (independent-
-      // sample tests on shared eval sets overstate significance).
-      // One conditional corpus aggregate, scalar algebra after.
-      val docs = t(s, dir, "documents")
-      val base = docs.select((col("lang") === "en").as("truth"),
-        (col("n_chars") >= 200).as("pa"),
-        (col("n_chars") <= operators.TextAnalysis.tokenCount(col("text"))
-          .cast("long") * 6).as("pb"))
-      val agg = base.agg(
-        count(lit(1)).as("n"),
-        sum(when(col("pa") === col("truth"), 1L).otherwise(0L))
-          .as("acc_a_n"),
-        sum(when(col("pb") === col("truth"), 1L).otherwise(0L))
-          .as("acc_b_n"),
-        sum(when(col("pa") === col("truth")
-          && col("pb") =!= col("truth"), 1L).otherwise(0L)).as("b01"),
-        sum(when(col("pb") === col("truth")
-          && col("pa") =!= col("truth"), 1L).otherwise(0L)).as("b10"))
-      val chi = (abs(col("b01") - col("b10")).cast("double") - 1.0) *
-        (abs(col("b01") - col("b10")).cast("double") - 1.0) /
-        (col("b01") + col("b10")).cast("double")
-      agg.select(col("n"), col("b01"), col("b10"),
-        round(col("acc_a_n").cast("double") / col("n").cast("double"),
-          6).as("acc_a"),
-        round(col("acc_b_n").cast("double") / col("n").cast("double"),
-          6).as("acc_b"),
-        when(col("b01") + col("b10") > 0, round(chi, 6)).as("chi2"),
-        (when(col("b01") + col("b10") > 0, chi).otherwise(lit(0.0))
-          > 3.841458820694124).as("significant"))
-    }),
-
-    "q263_lof" -> ((s, dir) => {
-      // Local Outlier Factor (Breunig, Kriegel, Ng & Sander, SIGMOD
-      // 2000) over the embedding set with cosine distance — the
-      // DENSITY-relative outlier score that catches points q142's
-      // global centroid distance misses (a point can sit near the
-      // centroid yet in a locally sparse pocket). kNN comes from the
-      // oracle-bitwise exact top-k (bounded query set broadcast, one
-      // corpus stream — at 100 TB this audit runs on exactly such a
-      // bounded sample, or swaps in the IVF/PQ candidate generator);
-      // k-distances, reachability, lrd and LOF are all joins on the
-      // bounded kNN table with DECIMAL(9,6)-exact distance sums.
-      // ≥k duplicate points make lrd infinite in the paper's
-      // definition — guarded to NULL here, identically in the oracle.
-      // Body shared with the sf1-class bench tier ([[largeBenchTier]]).
-      lofBody(s, t(s, dir, "embeddings"))
-    }),
-
-    "q264_data_shapley" -> ((s, dir) => {
-      // data valuation by EXACT Shapley over source groups (Ghorbani &
-      // Zou, ICML 2019) with a coverage utility: v(S) = how many
-      // held-out eval shingles the coalition's training docs cover —
-      // "which slice of the corpus is actually worth its storage" with
-      // the fair-division guarantee (Σφ = v(full)). The additive
-      // structure does the scale work: every shingle carries a 4-bit
-      // membership MASK (bit_or over training groups), so ALL 2⁴
-      // coalition values read off ONE ≤16-row mask histogram — never
-      // 16 corpus passes. The subset/weight enumeration is a Scala
-      // constant shared VERBATIM with the oracle's VALUES (the
-      // shapleySubsets contract).
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val base = docs.select(
-        expr("CAST(substring(source, 4, 10) AS INT) % 4").as("g"),
-        (substring(md5(col("doc_id").cast("string")), 1, 1) >= "c")
-          .as("ev"),
-        explode(operators.TextAnalysis.shingles(col("text"), 3))
-          .as("sh"))
-      val evalSh = base.filter(col("ev")).select(col("sh")).distinct()
-      val masks = base.filter(!col("ev"))
-        .join(evalSh, Seq("sh"), "left_semi")
-        .groupBy(col("sh"))
-        .agg(expr("bit_or(CAST(pow(2, g) AS INT))").as("mask"))
-      val hist = operators.Materializer.Local(
-        masks.groupBy(col("mask")).agg(count(lit(1)).as("cnt")))
-      import s.implicits._
-      val subsets = broadcast((0 until 16).map(m => m).toDF("smask"))
-      val vtab = operators.Materializer.Local(subsets
-        .join(broadcast(hist),
-          expr("(smask & mask) <> 0"), "left")
-        .groupBy(col("smask"))
-        .agg(coalesce(sum(col("cnt")), lit(0L)).as("v")))
-      val terms = broadcast(shapleyCoalitions.toDF(
-        "g", "s_without", "s_with", "w"))
-      val nTrain = docs.select(
-          expr("CAST(substring(source, 4, 10) AS INT) % 4").as("g"),
-          (substring(md5(col("doc_id").cast("string")), 1, 1) >= "c")
-            .as("ev"))
-        .filter(!col("ev")).groupBy(col("g"))
-        .agg(count(lit(1)).as("n_train_docs"))
-      val phi = terms
-        .join(operators.Hints.boundedBroadcast(vtab.select(col("smask").as("s_without"),
-          col("v").as("v0")), "subset_masks"), Seq("s_without"))
-        .join(operators.Hints.boundedBroadcast(vtab.select(col("smask").as("s_with"),
-          col("v").as("v1")), "subset_masks"), Seq("s_with"))
-        .select(col("g"),
-          round(col("w") * (col("v1") - col("v0")).cast("double"), 9)
-            .cast("decimal(19,9)").as("term"))
-        .groupBy(col("g"))
-        .agg(round(sum(col("term")).cast("double"), 6).as("shapley"))
-      val vfull = vtab.filter(col("smask") === 15)
-        .select(col("v").as("v_full"))
-      phi.join(operators.Hints.boundedBroadcast(nTrain, "fold_domain"), Seq("g"))
-        .crossJoin(operators.Hints.boundedBroadcast(vfull, "subset_masks"))
-        .select(col("g"), col("n_train_docs"), col("shapley"),
-          round(col("shapley") / col("v_full").cast("double"), 6)
-            .as("share"))
-        .orderBy(col("g"))
-    }),
-
-    "q265_ks_pvalue" -> ((s, dir) => {
-      // two-sample KS test WITH the asymptotic p-value per event type —
-      // q217/q221 report the statistic; this closes the loop with the
-      // Kolmogorov distribution tail (5-term alternating series, the
-      // textbook asymptotic with the small-sample correction factor
-      // √nₑ + 0.12 + 0.11/√nₑ) so a drift monitor can threshold on a
-      // probability, not a unit-free distance. D is exact integer
-      // algebra (max |cumA·nB − cumB·nA|) on the grid-bounded cents
-      // histogram; the series is pinned double op order, identical on
-      // both engines.
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
-      val e = ev.select(col("event_type").as("g"),
-        floor(col("value") * 100).cast("long").as("v"),
-        when(col("ts") < cutoff, 1L).otherwise(0L).as("is_ref"))
-      val h = e.groupBy(col("g"), col("v"))
-        .agg(sum(col("is_ref")).as("ca"),
-          sum(lit(1L) - col("is_ref")).as("cb"))
-      val wc = Window.partitionBy(col("g")).orderBy(col("v"))
-      val wt = Window.partitionBy(col("g"))
-      val stats = h.withColumn("cuma", sum(col("ca")).over(wc))
-        .withColumn("cumb", sum(col("cb")).over(wc))
-        .withColumn("na", sum(col("ca")).over(wt))
-        .withColumn("nb", sum(col("cb")).over(wt))
-        .filter(col("na") > 0 && col("nb") > 0)
-        .groupBy(col("g"), col("na"), col("nb"))
-        .agg(max(abs(col("cuma") * col("nb") - col("cumb") * col("na")))
-          .as("mx"))
-      val naD = col("na").cast("double")
-      val nbD = col("nb").cast("double")
-      val d = col("mx").cast("double") / (naD * nbD)
-      val ne = naD * nbD / (naD + nbD)
-      val lam = (sqrt(ne) + lit(0.12) + lit(0.11) / sqrt(ne)) * d
-      val l2 = lam * lam
-      val p = lit(2.0) * (exp(lit(-2.0) * l2) - exp(lit(-8.0) * l2)
-        + exp(lit(-18.0) * l2) - exp(lit(-32.0) * l2)
-        + exp(lit(-50.0) * l2))
-      val pc = least(lit(1.0), greatest(lit(0.0), p))
-      stats.select(col("g").as("event_type"),
-          col("na").cast("long").as("n_ref"),
-          col("nb").cast("long").as("n_cur"),
-          round(d, 6).as("d"), round(lam, 6).as("lambda"),
-          round(pc, 9).as("p_value"),
-          (round(pc, 9) < 0.05).as("reject"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q266_mann_whitney" -> ((s, dir) => {
-      // Mann–Whitney U / Wilcoxon rank-sum per event type between the
-      // reference and current periods (Mann & Whitney 1947) with the
-      // tie-corrected normal approximation — the median-shift
-      // complement to q265's KS (which is shape-sensitive; the
-      // rank-sum is the more powerful test when the alternative is a
-      // location shift). All rank algebra is EXACT integers on the
-      // grid-bounded cents histogram: 2·avgrank = 2·cumBefore + t + 1,
-      // so rank sums never touch a float until the final z; the tie
-      // term Σ(t³−t) lifts through DECIMAL(38,0); p is the A&S
-      // 26.2.17 two-sided tail in pinned op order.
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
-      def d38(c: Column) = c.cast("decimal(38,0)")
-      val h = ev.select(col("event_type").as("g"),
-          floor(col("value") * 100).cast("long").as("v"),
-          when(col("ts") < cutoff, 1L).otherwise(0L).as("is_ref"))
-        .groupBy(col("g"), col("v"))
-        .agg(sum(col("is_ref")).as("ca"),
-          sum(lit(1L) - col("is_ref")).as("cb"))
-      val wc = Window.partitionBy(col("g")).orderBy(col("v"))
-      val st = h.withColumn("tt", col("ca") + col("cb"))
-        .withColumn("cum", sum(col("tt")).over(wc))
-        .withColumn("ar2",
-          (col("cum") - col("tt")) * 2 + col("tt") + 1)
-        .groupBy(col("g"))
-        .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
-          sum(col("ca") * col("ar2")).as("r2a"),
-          sum(d38(col("tt")) * d38(col("tt")) * d38(col("tt"))
-            - d38(col("tt"))).as("ties"))
-        .filter(col("na") > 0 && col("nb") > 0)
-      val nD = (col("na") + col("nb")).cast("double")
-      val varU = col("na").cast("double") * col("nb").cast("double") /
-        12.0 * ((nD + 1.0)
-          - col("ties").cast("double") / (nD * (nD - 1.0)))
-      val z = (col("r2a") - col("na") * (col("na") + 1)
-        - col("na") * col("nb")).cast("double") / 2.0 / sqrt(varU)
-      val az = abs(z)
-      val ttp = lit(1.0) / (lit(1.0) + lit(0.2316419) * az)
-      val poly = ttp * (lit(0.319381530) + ttp * (lit(-0.356563782) +
-        ttp * (lit(1.781477937) + ttp * (lit(-1.821255978) +
-          ttp * lit(1.330274429)))))
-      val p = lit(2.0) * (lit(0.3989422804014327) *
-        exp(lit(-0.5) * az * az)) * poly
-      st.select(col("g").as("event_type"),
-          col("na").cast("long").as("n_ref"),
-          col("nb").cast("long").as("n_cur"),
-          round((col("r2a") - col("na") * (col("na") + 1))
-            .cast("double") / 2.0, 1).as("u_a"),
-          round(z, 6).as("z"), round(p, 9).as("p_value"),
-          (round(p, 9) < 0.05).as("reject"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q267_kruskal_wallis" -> ((s, dir) => {
-      // Kruskal–Wallis H (1952): does the value distribution differ
-      // across ALL event types at once — the k-group generalization of
-      // q266 that replaces k·(k−1)/2 pairwise tests (and their
-      // multiplicity problem) with one omnibus rank test. Rank sums
-      // are exact integers on the pooled cents histogram (global
-      // window over the bounded grid — the q177 contract); the
-      // tie-corrected H maps to a p-value through the Wilson–Hilferty
-      // cube-root χ² normal approximation, A&S tail, both in pinned
-      // op order. One (type, cents) corpus exchange total.
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      def d38(c: Column) = c.cast("decimal(38,0)")
-      val hg = operators.Materializer.Local(
-        ev.select(col("event_type").as("g"),
-            floor(col("value") * 100).cast("long").as("v"))
-          .groupBy(col("g"), col("v"))
-          .agg(count(lit(1)).as("cnt")))
-      val pooled = operators.Materializer.Local(
-        hg.groupBy(col("v")).agg(sum(col("cnt")).as("tt")))
-      val wv = Window.orderBy(col("v"))
-      val pr = pooled.withColumn("cum", sum(col("tt")).over(wv))
-        .select(col("v"),
-          ((col("cum") - col("tt")) * 2 + col("tt") + 1).as("ar2"))
-      val perg = hg.join(operators.Hints.boundedBroadcast(pr, "value_grid"), Seq("v"))
-        .groupBy(col("g"))
-        .agg(sum(col("cnt")).as("ng"),
-          sum(col("cnt") * col("ar2")).as("r2g"))
-      val gstats = perg.agg(count(lit(1)).as("k"),
-        sum(col("ng")).as("n"),
-        sum(round((col("r2g").cast("double") / 2.0)
-            * (col("r2g").cast("double") / 2.0)
-            / col("ng").cast("double"), 6).cast("decimal(38,6)"))
-          .as("sr"))
-      val ties = pooled.agg(
-        sum(d38(col("tt")) * d38(col("tt")) * d38(col("tt"))
-          - d38(col("tt"))).as("ties"))
-      val nD = col("n").cast("double")
-      val hUnc = lit(12.0) / (nD * (nD + 1.0)) *
-        col("sr").cast("double") - lit(3.0) * (nD + 1.0)
-      val corr = lit(1.0) - col("ties").cast("double") /
-        (nD * nD * nD - nD)
-      val hStat = hUnc / corr
-      val df = col("k").cast("double") - 1.0
-      val r = hStat / df
-      val zwh = (cbrt(r) - (lit(1.0) - lit(2.0) / (lit(9.0) * df))) /
-        sqrt(lit(2.0) / (lit(9.0) * df))
-      val az = abs(zwh)
-      val ttp = lit(1.0) / (lit(1.0) + lit(0.2316419) * az)
-      val poly = ttp * (lit(0.319381530) + ttp * (lit(-0.356563782) +
-        ttp * (lit(1.781477937) + ttp * (lit(-1.821255978) +
-          ttp * lit(1.330274429)))))
-      val tail = lit(0.3989422804014327) * exp(lit(-0.5) * az * az) *
-        poly
-      val p = when(zwh >= 0, tail).otherwise(lit(1.0) - tail)
-      gstats.crossJoin(broadcast(ties))
-        .select(col("k").cast("long").as("k"),
-          col("n").cast("long").as("n"),
-          round(hStat, 6).as("h"), round(zwh, 6).as("z_wh"),
-          round(p, 9).as("p_value"),
-          (round(p, 9) < 0.05).as("reject"))
-    }),
-
-    "q268_quality_logreg" -> ((s, dir) => {
-      // corpus quality classifier trained IN the engine: full-batch
-      // gradient-descent logistic regression (the GPT-3 §2.2 /
-      // CCNet-style shape — heuristic label, cheap features, corpus-
-      // scale scoring) predicting lang='en' from two layout features
-      // (log chars, chars-per-token), both z-scored. The corpus pays
-      // ONE exchange to build the bounded feature-grid histogram;
-      // moments, standardization and every GD round are algebra on
-      // that table via Stats.logisticGdHist — 10 rounds cost zero
-      // extra corpus passes, the property that makes iterative
-      // training viable at 100 TB.
-      val docs = t(s, dir, "documents")
-      val ntok = greatest(
-        operators.TextAnalysis.tokenCount(col("text")).cast("long"),
-        lit(1L))
-      val hist = operators.Materializer.Local(docs.select(
-          round(log(col("n_chars").cast("double") + 1.0), 2).as("u"),
-          round(col("n_chars").cast("double") / ntok.cast("double"), 1)
-            .as("v"),
-          (col("lang") === "en").as("y"))
-        .groupBy(col("u"), col("v"), col("y"))
-        .agg(count(lit(1)).as("n")))
-      def pin6(c: Column) = round(c, 6).cast("decimal(29,6)")
-      val mom = hist.agg(sum(col("n")).as("nt"),
-        sum(pin6(col("u") * col("n"))).as("su"),
-        sum(pin6(col("u") * col("u") * col("n"))).as("suu"),
-        sum(pin6(col("v") * col("n"))).as("sv"),
-        sum(pin6(col("v") * col("v") * col("n"))).as("svv"))
-      val nD = col("nt").cast("double")
-      val mu = col("su").cast("double") / nD
-      val mv = col("sv").cast("double") / nD
-      val sdu = sqrt(col("suu").cast("double") / nD - mu * mu)
-      val sdv = sqrt(col("svv").cast("double") / nD - mv * mv)
-      val feats = hist.crossJoin(broadcast(mom))
-        .select(round((col("u") - mu) / sdu, 6).as("x1"),
-          round((col("v") - mv) / sdv, 6).as("x2"),
-          col("y"), col("n"))
-      operators.Stats.logisticGdHist(feats, Seq("x1", "x2"), "y", "n",
-        rounds = 10, lr = 2.0)
-    }),
-
-    "q269_cox_purchase" -> ((s, dir) => {
-      // Cox proportional-hazards time-to-conversion model (Cox 1972,
-      // Breslow ties): does signing up on day one change the hazard
-      // of a first purchase? Subjects are users from their first
-      // active day; event = first purchase within a fixed 5-day
-      // follow-up window, administratively censored at day 5
-      // otherwise — the standard fixed-horizon design, so the
-      // censoring path is genuinely exercised. Covariate = signup on
-      // the origin day (pure min-algebra — no argmin tie-break, so
-      // every engine derives the same cohort). This is the REGRESSION
-      // complement of q168's Kaplan–Meier curves: one β with a
-      // standard error instead of two curves to eyeball. One
-      // user-keyed corpus rollup; risk sets, Newton rounds and the
-      // Wald test all ride the bounded duration grid in
-      // Stats.coxNewtonBinary.
-      val ev = t(s, dir, "events")
-      val day = expr("unix_micros(ts) DIV 86400000000")
-      val byUser = ev.groupBy(col("user_id")).agg(
-        min(day).as("d0"),
-        min(when(col("event_type") === "purchase", day)).as("dp"),
-        min(when(col("event_type") === "signup", day)).as("ds"))
-      val death = col("dp").isNotNull && col("dp") - col("d0") <= 5
-      val subj = byUser.select(
-        when(death, col("dp") - col("d0")).otherwise(lit(5L)).as("t"),
-        coalesce(col("ds") === col("d0"), lit(false)).as("x"),
-        death.as("death"))
-      val hist = subj.groupBy(col("t"), col("x")).agg(
-        sum(when(col("death"), 1L).otherwise(0L)).as("deaths"),
-        count(lit(1)).as("total"))
-      operators.Stats.coxNewtonBinary(hist, "t", "x", "deaths",
-        "total", rounds = 4)
-    }),
-
-    "q270_item_cf" -> ((s, dir) => {
-      // item-item collaborative filtering (Sarwar et al., WWW 2001;
-      // the Amazon item-to-item shape, Linden et al. 2003): top-5
-      // nearest items by co-occurrence cosine over order baskets —
-      // the "users who bought X also bought" neighbor lists a
-      // retrieval or recommendation pipeline precomputes offline.
-      // Candidate pairs come ONLY from the within-basket self-join
-      // (bounded basket width keeps pairs ≈ orders·w², never
-      // items²); item margins broadcast back; the per-item top-k is
-      // a window partitioned by item — never a global sort. co≥2
-      // prunes the accidental-pair tail before the shuffle.
-      import org.apache.spark.sql.expressions.Window
-      val li = t(s, dir, "lineitem")
-      // materialized: referenced by the margin aggregate AND the pair
-      // build; pairs via the basket-aggregation shape (one exchange)
-      // instead of the ok-keyed self-join — identical pair supports
-      val baskets = operators.Materializer.Local(
-        li.select(col("l_orderkey").as("ok"),
-          col("l_partkey").as("pk")).distinct())
-      val n = baskets.groupBy(col("pk")).agg(count(lit(1)).as("cnt"))
-      val pairs = basketPairCounts(baskets, "ok", "pk")
-        .select(col("pa").as("pk"), col("pb").as("pk2"),
-          col("cm").as("co"))
-        .filter(col("co") >= 2)
-      val sym = pairs
-        .select(col("pk").as("a"), col("pk2").as("b"), col("co"))
-        .unionByName(pairs
-          .select(col("pk2").as("a"), col("pk").as("b"), col("co")))
-      // margins join unhinted: n is one row per part (SF-linear), so a
-      // forced broadcast is the 100x-scale OOM class — both sides key on
-      // the part id, and AQE still broadcasts when n is genuinely small.
-      // JOIN ORDER is b-margin FIRST, a-margin LAST: the unhinted joins
-      // are shuffle joins, and ending on the a-key leaves the pair
-      // stream hash-partitioned by a — exactly the rank window's
-      // partitioning — so the window reuses the join exchange instead
-      // of adding a fourth shuffle of the pair stream
-      val scored = sym
-        .join(n.select(col("pk").as("b"),
-          col("cnt").as("nb")), Seq("b"))
-        .join(n.select(col("pk").as("a"),
-          col("cnt").as("na")), Seq("a"))
-        .select(col("a"), col("b"), col("co"),
-          round(col("co").cast("double") /
-            sqrt(col("na").cast("double") * col("nb").cast("double")),
-            9).as("cos"))
-      val w = Window.partitionBy(col("a"))
-        .orderBy(col("cos").desc, col("b").asc)
-      scored.withColumn("rk", row_number().over(w).cast("int"))
-        .filter(col("rk") <= 5)
-        .select(col("a").as("item"), col("b").as("neighbor"),
-          col("co"), round(col("cos"), 6).as("cosine"), col("rk"))
-        .orderBy(col("item"), col("rk"))
-    }),
-
-    "q271_uplift_qini" -> ((s, dir) => {
-      // uplift by segment with the Qini curve (Radcliffe 2007): per
-      // user-segment, the treated-vs-control conversion lift, segments
-      // ranked by estimated uplift, and the cumulative incremental
-      // gains curve with its Qini AUC — the standard readout for
-      // "WHERE does the treatment work", one level deeper than q147's
-      // single overall z. Arms are the deterministic md5 coin
-      // (q147/q244 precedent), so the true uplift is null and the
-      // curve should hug the random-targeting diagonal — the honest
-      // calibration check for the estimator itself. One user rollup +
-      // one segment rollup; ranking, curve and AUC ride the bounded
-      // 8-row segment table (global window — the q177 contract).
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val users = ev.groupBy(col("user_id")).agg(
-        sum(when(col("event_type") === "purchase",
-          col("value").cast("decimal(19,6)"))
-          .otherwise(lit(0).cast("decimal(19,6)"))).as("rev"))
-      val unit = users.select(pmod(col("user_id"), lit(8L)).as("segment"),
-        (substring(md5(col("user_id").cast("string")), 1, 1) < "8")
-          .as("treated"),
-        (col("rev") >= 600).as("conv"))
-      // a segment without both arms has no defined uplift (and would
-      // divide by zero under ANSI) — excluded from the curve, and the
-      // totals are over the TESTED segments so the curve endpoint is
-      // consistent
-      val seg = operators.Materializer.Local(
-        unit.groupBy(col("segment")).agg(
-          sum(when(col("treated"), 1L).otherwise(0L)).as("n_t"),
-          sum(when(!col("treated"), 1L).otherwise(0L)).as("n_c"),
-          sum(when(col("treated") && col("conv"), 1L).otherwise(0L))
-            .as("y_t"),
-          sum(when(!col("treated") && col("conv"), 1L).otherwise(0L))
-            .as("y_c"))
-          .filter(col("n_t") > 0 && col("n_c") > 0))
-      val up = seg.withColumn("uplift",
-        round(col("y_t").cast("double") / col("n_t").cast("double")
-          - col("y_c").cast("double") / col("n_c").cast("double"), 6))
-      val wr = Window.orderBy(col("uplift").desc, col("segment").asc)
-      val wcum = wr.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)
-      val tot = seg.agg(sum(col("n_t")).as("tn_t"),
-        sum(col("n_c")).as("tn_c"), sum(col("y_t")).as("ty_t"),
-        sum(col("y_c")).as("ty_c"))
-      val ranked = operators.Materializer.Local(up
-        .withColumn("rank", row_number().over(wr).cast("int"))
-        .withColumn("cn_t", sum(col("n_t")).over(wcum))
-        .withColumn("cn_c", sum(col("n_c")).over(wcum))
-        .withColumn("cy_t", sum(col("y_t")).over(wcum))
-        .withColumn("cy_c", sum(col("y_c")).over(wcum))
-        .crossJoin(broadcast(tot))
-        .withColumn("frac_pop",
-          round((col("cn_t") + col("cn_c")).cast("double") /
-            (col("tn_t") + col("tn_c")).cast("double"), 6))
-        .withColumn("cum_gain",
-          when(col("cn_c") > 0,
-            round(col("cy_t").cast("double") - col("cy_c").cast("double")
-              * (col("cn_t").cast("double") / col("cn_c").cast("double")),
-              6))))
-      val wl = Window.orderBy(col("rank"))
-      val auc = ranked
-        .withColumn("pf", lag(col("frac_pop"), 1, 0.0).over(wl))
-        .withColumn("pg", lag(col("cum_gain"), 1, 0.0).over(wl))
-        .select(round((col("frac_pop") - col("pf"))
-          * (col("cum_gain") + col("pg")) / 2.0, 9)
-          .cast("decimal(19,9)").as("term"))
-        .agg(sum(col("term")).as("auc"))
-      ranked.crossJoin(broadcast(auc))
-        .select(col("segment"), col("n_t"), col("n_c"), col("y_t"),
-          col("y_c"), col("uplift"), col("rank"), col("frac_pop"),
-          col("cum_gain"),
-          round(col("auc").cast("double")
-            - (col("ty_t").cast("double") - col("ty_c").cast("double")
-              * (col("tn_t").cast("double") / col("tn_c").cast("double")))
-              / 2.0, 6).as("qini"))
-        .orderBy(col("rank"))
-    }),
-
-    "q272_ipf_raking" -> ((s, dir) => {
-      // iterative proportional fitting / raking (Deming & Stephan
-      // 1940 — the same alternating-normalization kernel as Sinkhorn
-      // scaling): reweight the (source × lang) corpus cells so both
-      // margins match uniform targets — the survey-calibration /
-      // mixture-balancing move a corpus curator applies when one
-      // source over-represents a language. The corpus pays ONE cell
-      // rollup; all 6 IPF rounds are margin-scaling algebra on the
-      // bounded cell table, each half-round localCheckpointed so
-      // lineage stays flat (round(12) requantization + DECIMAL margin
-      // sums = the unrolled-SQL-replay contract). Cells absent from
-      // the corpus stay absent (raking fits over observed support).
-      val docs = t(s, dir, "documents")
-      val cells0 = operators.Materializer.Local(docs
-        .groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n")).withColumn("w", lit(1.0)))
-      val dims = cells0.agg(sum(col("n")).as("nt"),
-        countDistinct(col("source")).as("ks"),
-        countDistinct(col("lang")).as("kl"))
-      var cells = cells0.crossJoin(broadcast(dims))
-      for (_ <- 1 to 6) {
-        val rs = cells.groupBy(col("source")).agg(
-          sum(round(col("n") * col("w"), 6).cast("decimal(29,6)"))
-            .as("msum"))
-        cells = operators.Materializer.Local(
-          cells.join(broadcast(rs), Seq("source"))
-            .withColumn("w", round(col("w")
-              * ((col("nt").cast("double") / col("ks").cast("double"))
-                / col("msum").cast("double")), 12))
-            .drop("msum"))
-        val cs = cells.groupBy(col("lang")).agg(
-          sum(round(col("n") * col("w"), 6).cast("decimal(29,6)"))
-            .as("msum"))
-        cells = operators.Materializer.Local(
-          cells.join(broadcast(cs), Seq("lang"))
-            .withColumn("w", round(col("w")
-              * ((col("nt").cast("double") / col("kl").cast("double"))
-                / col("msum").cast("double")), 12))
-            .drop("msum"))
-      }
-      cells.select(col("source"), col("lang"), col("n"),
-          round(col("w"), 6).as("weight"),
-          round(col("n").cast("double") * col("w"), 6).as("fitted"))
-        .orderBy(col("source"), col("lang"))
-    }),
-
-    "q273_betweenness" -> ((s, dir) => {
-      // sampled-source betweenness centrality over the support>=2
-      // co-purchase graph (Brandes 2001 / Brandes-Pich 2007 pivots):
-      // which items sit ON the shortest paths between others — the
-      // bridge/broker score that PageRank (q107), HITS (q248) and
-      // k-core (q153) all miss, and the classic "cut vertex" signal
-      // for catalog or knowledge-graph curation. Pivots are a FIXED
-      // budget (Brandes-Pich's actual knob): the K=16 lowest nodes by
-      // md5 hash-rank — a deterministic uniform sample whose COUNT
-      // does not grow with the corpus, so total work stays ~K x edges
-      // (linear in the corpus) at every SF; K is the per-deployment
-      // accuracy knob you raise on a bigger cluster. (The earlier
-      // node%251 rule made the pivot count — and total work — grow
-      // with the node count: ~nodes x edges, a 45x jump on 10x data,
-      // 214 s = 27% of the round-10 sf1 budget. With the fixed budget
-      // the sf1 bench runs FULL-SIZE — the tier slice existed only to
-      // contain that superlinearity.) All pivots BFS simultaneously
-      // (state keyed (seed,node)), depth-bounded at 4 — see
-      // Graph.betweennessSampled for the per-layer shuffle shape.
-      // materialized ONCE: both the pivot selection and the BFS body
-      // reference `edges`, and an uncached subtree re-executes the
-      // lineitem self-join + support aggregate per reference; results
-      // identical — the materializer only pins the already-deterministic
-      // edge set
-      val edges = operators.Materializer.Local(
-        copurchaseEdges(t(s, dir, "lineitem")))
-      operators.Graph.betweennessSampled(edges,
-        betweennessPivots(edges, 16), maxDepth = 4)
-    }),
-
-    "q274_forecast_backtest" -> ((s, dir) => {
-      // seasonal-naive forecast backtest with MASE (Hyndman &
-      // Koehler 2006): forecast each day's revenue as the value 7
-      // days earlier, then score MAE / RMSE / sMAPE and MASE (MAE
-      // scaled by the one-step naive MAE over the same window —
-      // MASE < 1 means the weekly pattern genuinely helps). The
-      // model-eval loop every forecasting pipeline runs before
-      // promoting a model; here the "model" is the baseline every
-      // candidate must beat. One day-keyed corpus rollup; lags and
-      // error sums ride the bounded daily table with exact DECIMAL
-      // errors (sMAPE's per-row ratio round(9)-pinned).
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val daily = operators.Materializer.Local(ev
-        .select(expr("unix_micros(ts) DIV 86400000000").as("dy"),
-          col("value").cast("decimal(19,6)").as("v"))
-        .groupBy(col("dy")).agg(sum(col("v")).as("y")))
-      val wv = Window.orderBy(col("dy"))
-      val lagged = daily
-        .withColumn("f7", lag(col("y"), 7).over(wv))
-        .withColumn("p1", lag(col("y"), 1).over(wv))
-      val evald = lagged.filter(col("f7").isNotNull
-        && col("p1").isNotNull)
-      val err = abs(col("y") - col("f7"))
-      val errD = err.cast("double")
-      val den = abs(col("y")).cast("double") +
-        abs(col("f7")).cast("double")
-      val agg = evald.agg(count(lit(1)).as("n_eval"),
-        sum(err).as("sae"),
-        sum(round(errD * errD, 6).cast("decimal(29,6)")).as("sse"),
-        sum(abs(col("y") - col("p1"))).as("sae1"),
-        sum(round(when(abs(col("y")) + abs(col("f7")) > 0,
-            errD * 2.0 / den).otherwise(lit(0.0)), 9)
-          .cast("decimal(19,9)")).as("ssm"))
-      val nD = col("n_eval").cast("double")
-      val totald = daily.agg(count(lit(1)).as("n_days"))
-      agg.crossJoin(broadcast(totald))
-        .select(col("n_days").cast("long").as("n_days"),
-          col("n_eval").cast("long").as("n_eval"),
-          round(col("sae").cast("double") / nD, 6).as("mae"),
-          round(sqrt(col("sse").cast("double") / nD), 6).as("rmse"),
-          round(col("ssm").cast("double") / nD, 6).as("smape"),
-          round(col("sae").cast("double")
-            / col("sae1").cast("double"), 6).as("mase"))
-    }),
-
-    "q275_wilcoxon_signed" -> ((s, dir) => {
-      // Wilcoxon signed-rank test (Wilcoxon 1945) on PAIRED per-user
-      // purchase revenue, reference vs current period: each user is
-      // their own control, so user-level variance cancels — the
-      // nonparametric paired complement to q266's unpaired rank-sum
-      // (and the continuous sibling of q262's binary McNemar). Zero
-      // differences drop (Wilcoxon's rule), ranks of |d| use the
-      // tie-averaged 2·rank integer algebra on the cents-exact
-      // difference histogram (differences of cents sums are integers,
-      // so the histogram is bounded by the cents RANGE, not the user
-      // count), and the tie-corrected normal z maps to the A&S
-      // two-sided p in pinned op order.
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-      val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
-      def d38(c: Column) = c.cast("decimal(38,0)")
-      val perUser = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("vc"),
-          when(col("ts") < cutoff, 1L).otherwise(0L).as("is_ref"))
-        .groupBy(col("user_id"))
-        .agg(sum(when(col("is_ref") === 1L, col("vc")).otherwise(0L))
-          .as("before"),
-          sum(when(col("is_ref") === 0L, col("vc")).otherwise(0L))
-            .as("after"))
-      val nz = perUser.select((col("after") - col("before")).as("d"))
-      val zeros = nz.agg(sum(when(col("d") === 0L, 1L).otherwise(0L))
-        .as("n_zero"))
-      val h = nz.filter(col("d") =!= 0L)
-        .groupBy(abs(col("d")).as("ad"))
-        .agg(sum(when(col("d") > 0, 1L).otherwise(0L)).as("pos"),
-          count(lit(1)).as("tt"))
-      val wc = Window.orderBy(col("ad"))
-      val st = h.withColumn("cum", sum(col("tt")).over(wc))
-        .withColumn("ar2",
-          (col("cum") - col("tt")) * 2 + col("tt") + 1)
-        .agg(sum(col("tt")).as("n"),
-          sum(col("pos") * col("ar2")).as("w2"),
-          sum(d38(col("tt")) * d38(col("tt")) * d38(col("tt"))
-            - d38(col("tt"))).as("ties"))
-      // 48·Var = 2n(n+1)(2n+1) − Σ(t³−t), and the centered statistic
-      // 4·(W+ − μ) = 2·W2 − n(n+1): exact integers until the final z
-      val var48 = d38(lit(2)) * d38(col("n")) * d38(col("n") + 1) *
-        d38(col("n") * 2 + 1) - col("ties")
-      val z = (col("w2") * 2 - col("n") * (col("n") + 1))
-        .cast("double") / 4.0 / sqrt(var48.cast("double") / 48.0)
-      val az = abs(z)
-      val ttp = lit(1.0) / (lit(1.0) + lit(0.2316419) * az)
-      val poly = ttp * (lit(0.319381530) + ttp * (lit(-0.356563782) +
-        ttp * (lit(1.781477937) + ttp * (lit(-1.821255978) +
-          ttp * lit(1.330274429)))))
-      val p = lit(2.0) * (lit(0.3989422804014327) *
-        exp(lit(-0.5) * az * az)) * poly
-      st.crossJoin(broadcast(zeros))
-        .select(col("n").cast("long").as("n_pairs"),
-          col("n_zero").cast("long").as("n_zero"),
-          round(col("w2").cast("double") / 2.0, 1).as("w_plus"),
-          round(z, 6).as("z"), round(p, 9).as("p_value"),
-          (round(p, 9) < 0.05).as("reject"))
-    }),
-
-    "q276_ipw_ate" -> ((s, dir) => {
-      // inverse-propensity-weighted ATE with an IN-ENGINE logistic
-      // propensity model (Rosenbaum & Rubin 1983; Hájek-normalized,
-      // Horvitz-Thompson family): does urgent order priority shift
-      // order value once customer balance and season are adjusted
-      // for? The whole estimator rides ONE bounded histogram: the
-      // corpus pays a single orders⋈customer join + rollup into
-      // (balance-grid, month, treated) cells carrying counts AND
-      // outcome sums; the propensity fit (Stats.logisticGdHist, 8
-      // GD rounds), the cell-level p̂ scores, the [0.01,0.99]
-      // trimming (Crump et al. 2009) and the weighted means are all
-      // algebra on those cells — treatment modeling with zero extra
-      // corpus passes. The md5-coin designs (q147/q271) randomize
-      // and so never need this; IPW is the estimator for OBSERVED
-      // treatments.
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      // customer is SF-linear: no forced broadcast — the join is
-      // equi-keyed on custkey and AQE picks the strategy by real size
-      val joined = o.join(c,
-        col("o_custkey") === col("c_custkey"))
-      val hist = operators.Materializer.Local(joined.select(
-          round(col("c_acctbal") / 1000.0, 1).as("u"),
-          month(col("o_orderdate")).cast("double").as("v"),
-          col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("tr"),
-          col("o_totalprice").cast("decimal(19,6)").as("y"))
-        .groupBy(col("u"), col("v"), col("tr"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("sumy")))
-      def pin6(cc: Column) = round(cc, 6).cast("decimal(29,6)")
-      val mom = hist.agg(sum(col("n")).as("nt"),
-        sum(pin6(col("u") * col("n"))).as("su"),
-        sum(pin6(col("u") * col("u") * col("n"))).as("suu"),
-        sum(pin6(col("v") * col("n"))).as("sv"),
-        sum(pin6(col("v") * col("v") * col("n"))).as("svv"))
-      val nD = col("nt").cast("double")
-      val mu = col("su").cast("double") / nD
-      val mv = col("sv").cast("double") / nD
-      val sdu = sqrt(col("suu").cast("double") / nD - mu * mu)
-      val sdv = sqrt(col("svv").cast("double") / nD - mv * mv)
-      val feats = operators.Materializer.Local(
-        hist.crossJoin(broadcast(mom))
-          .select(round((col("u") - mu) / sdu, 6).as("x1"),
-            round((col("v") - mv) / sdv, 6).as("x2"),
-            col("tr"), col("n"), col("sumy")))
-      val fit = operators.Stats.logisticGdHist(feats,
-        Seq("x1", "x2"), "tr", "n", rounds = 8, lr = 2.0)
-      val phat = least(lit(0.99), greatest(lit(0.01),
-        lit(1.0) / (lit(1.0) + exp(-(col("w0") + col("w1") * col("x1")
-          + col("w2") * col("x2"))))))
-      val scored = feats.crossJoin(broadcast(
-        fit.select(col("w0"), col("w1"), col("w2"))))
-      def pin9(cc: Column) = round(cc, 6).cast("decimal(29,6)")
-      val sums = scored.agg(
-        sum(col("n")).as("n"),
-        sum(when(col("tr"), col("n")).otherwise(0L)).as("n_t"),
-        sum(when(col("tr"), col("sumy"))
-          .otherwise(lit(0).cast("decimal(29,6)"))).as("y_t_raw"),
-        sum(when(!col("tr"), col("sumy"))
-          .otherwise(lit(0).cast("decimal(29,6)"))).as("y_c_raw"),
-        sum(when(col("tr"),
-          pin9(col("sumy").cast("double") / phat))
-          .otherwise(lit(0).cast("decimal(29,6)"))).as("wy_t"),
-        sum(when(col("tr"), pin9(col("n").cast("double") / phat))
-          .otherwise(lit(0).cast("decimal(29,6)"))).as("wn_t"),
-        sum(when(!col("tr"),
-          pin9(col("sumy").cast("double") / (lit(1.0) - phat)))
-          .otherwise(lit(0).cast("decimal(29,6)"))).as("wy_c"),
-        sum(when(!col("tr"),
-          pin9(col("n").cast("double") / (lit(1.0) - phat)))
-          .otherwise(lit(0).cast("decimal(29,6)"))).as("wn_c"),
-        max(col("w0")).as("w0"), max(col("w1")).as("w1"),
-        max(col("w2")).as("w2"))
-      sums.select(col("n").cast("long").as("n"),
-        col("n_t").cast("long").as("n_t"),
-        col("w0"), col("w1"), col("w2"),
-        round(col("y_t_raw").cast("double")
-            / col("n_t").cast("double")
-          - col("y_c_raw").cast("double")
-            / (col("n") - col("n_t")).cast("double"), 6)
-          .as("naive_diff"),
-        round(col("wy_t").cast("double") / col("wn_t").cast("double")
-          - col("wy_c").cast("double") / col("wn_c").cast("double"), 6)
-          .as("ate_ipw"))
-    }),
-
-    "q277_poisson_bootstrap" -> ((s, dir) => {
-      // Poisson-bootstrap standard error for revenue-per-order at
-      // CUSTOMER grain (Chamandy, Muralidharan, Najmi & Naidu 2012 —
-      // the bootstrap that actually runs at 100 TB): a multinomial
-      // resample needs the global n before any row can draw its count,
-      // but Binomial(n, 1/n) → Poisson(1), so each unit draws B=64
-      // independent multiplicities map-side from the deterministic
-      // md5-uniform (q195/q257 convention) — replayable, coordination-
-      // free, one shuffle. The corpus pays ONE rollup to per-customer
-      // (orders, revenue); the ×64 explode and the resample aggregate
-      // ride that bounded unit table; resampling at the unit grain
-      // keeps each customer's correlated orders together (the same
-      // reason q243's jackknife buckets by user). Output: the point
-      // estimate, bootstrap mean/SE, and the exact 2nd/63rd
-      // order-statistic percentile CI.
-      import org.apache.spark.sql.expressions.Window
-      val o = t(s, dir, "orders")
-      val units = operators.Materializer.Local(
-        o.groupBy(col("o_custkey")).agg(
-          count(lit(1)).as("n_ord"),
-          sum(col("o_totalprice").cast("decimal(19,6)")).as("sumy")))
-      val fullT = units.agg(count(lit(1)).as("n_units"),
-        round(sum(col("sumy")).cast("double")
-          / sum(col("n_ord")).cast("double"), 9).as("theta_hat"))
-      val u = (conv(substring(md5(concat(lit("pb|"),
-          col("o_custkey").cast("string"), lit("|"),
-          col("b").cast("string"))), 1, 8), 16, 10).cast("double")
-        + lit(0.5)) / lit(4294967296.0)
-      val boot = operators.Materializer.Local(units
-        .select(col("o_custkey"), col("n_ord"), col("sumy"),
-          explode(sequence(lit(0), lit(63))).as("b"))
-        .select(col("b"), operators.Stats.poissonWeight(u).as("w"),
-          col("n_ord"), col("sumy"))
-        .groupBy(col("b"))
-        .agg(round(
-          sum(col("w").cast("decimal(2,0)") * col("sumy"))
-            .cast("double")
-          / sum(col("w") * col("n_ord")).cast("double"), 9)
-          .as("theta_b")))
-      val ss = boot.agg(
-        sum(round(col("theta_b"), 9).cast("decimal(29,9)")).as("st"),
-        sum(round(col("theta_b") * col("theta_b"), 6)
-          .cast("decimal(29,6)")).as("stt"))
-      val ranked = boot.select(col("theta_b"), row_number()
-        .over(Window.orderBy(col("theta_b"), col("b"))).as("rn"))
-      val lo = ranked.filter(col("rn") === 2)
-        .select(round(col("theta_b"), 6).as("ci_lo"))
-      val hi = ranked.filter(col("rn") === 63)
-        .select(round(col("theta_b"), 6).as("ci_hi"))
-      fullT.crossJoin(broadcast(ss))
-        .crossJoin(operators.Hints.boundedBroadcast(lo, "replicate_set"))
-        .crossJoin(operators.Hints.boundedBroadcast(hi, "replicate_set"))
-        .select(col("n_units"), lit(64).as("b_count"),
-          col("theta_hat"),
-          round(col("st").cast("double") / lit(64.0), 6)
-            .as("boot_mean"),
-          round(sqrt((col("stt").cast("double")
-            - col("st").cast("double") * col("st").cast("double")
-              / lit(64.0)) / lit(63.0)), 6).as("boot_se"),
-          col("ci_lo"), col("ci_hi"))
-    }),
-
-    "q278_signflip_test" -> ((s, dir) => {
-      // paired sign-flip randomization test (Fisher 1935; the exact
-      // finite-sample test a parametric paired t approximates): did
-      // per-user mean event value shift between the first and second
-      // half of the observation window? Under H0 each user's paired
-      // difference is symmetric, so its sign is exchangeable — flip
-      // signs by the deterministic md5 bit per (user, permutation),
-      // P=128 replayable permutations, p = (1 + #{|T_p| ≥ |T|})/(P+1)
-      // (the add-one rule that keeps the test exact, Phipson & Smyth
-      // 2010). ONE corpus exchange to (user, half) cells; the pair
-      // table is user-bounded and the ×128 flip explode rides it
-      // map-side. The readout on this corpus is an honest null
-      // (p ≈ 0.8) — the q238 "no signal" convention.
-      val ev = t(s, dir, "events")
-      val bounds = ev.agg(expr(
-        "(min(unix_micros(ts)) + max(unix_micros(ts))) DIV 2")
-        .as("mid"))
-      val halves = operators.Materializer.Local(
-        ev.crossJoin(broadcast(bounds))
-          .select(col("user_id"),
-            (unix_micros(col("ts")) >= col("mid")).as("h2"),
-            col("value"))
-          .groupBy(col("user_id"), col("h2"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(19,6)")).as("sv")))
-      val a = halves.filter(!col("h2"))
-        .select(col("user_id"), col("n").as("na"), col("sv").as("sa"))
-      val b2 = halves.filter(col("h2"))
-        .select(col("user_id").as("u2"), col("n").as("nb"),
-          col("sv").as("sb"))
-      // the pair join is UNHINTED: both halves are user-cardinality
-      // (entity-scale at 100 TB) — a forced broadcast would bypass the
-      // size check and OOM instead of falling back; both sides already
-      // arrive hash-partitioned on the user key from the halves
-      // aggregate, so the shuffled join is cheap and AQE still
-      // broadcasts when a side is genuinely small
-      val pairs = operators.Materializer.Local(
-        a.join(b2, col("user_id") === col("u2"))
-          .select(col("user_id"),
-            round(col("sa").cast("double") / col("na").cast("double")
-              - col("sb").cast("double") / col("nb").cast("double"), 9)
-              .as("d")))
-      val obs = pairs.agg(count(lit(1)).as("n_pairs"),
-        round(sum(col("d").cast("decimal(29,9)")).cast("double")
-          / count(lit(1)).cast("double"), 9).as("t_obs"))
-      val flip = when(substring(md5(concat(lit("sf|"),
-          col("user_id").cast("string"), lit("|"),
-          col("p").cast("string"))), 1, 1) < lit("8"),
-        col("d")).otherwise(-col("d"))
-      val flips = pairs
-        .select(col("user_id"), col("d"),
-          explode(sequence(lit(0), lit(127))).as("p"))
-        .groupBy(col("p"))
-        .agg(round(sum(round(flip, 9).cast("decimal(29,9)"))
-            .cast("double") / count(lit(1)).cast("double"), 9)
-          .as("t_p"))
-      val cnt = flips.crossJoin(broadcast(obs))
-        .filter(abs(col("t_p")) >= abs(col("t_obs")))
-        .agg(count(lit(1)).as("n_ge"))
-      obs.crossJoin(broadcast(cnt))
-        .select(col("n_pairs"), col("t_obs"), col("n_ge"),
-          round((lit(1.0) + col("n_ge").cast("double")) / lit(129.0),
-            6).as("p_value"))
-    }),
-
-    "q279_aipw_ate" -> ((s, dir) => {
-      // doubly-robust AIPW ATE (Robins, Rotnitzky & Zhao 1994; the
-      // augmented estimator that stays consistent if EITHER the
-      // propensity model or the outcome model is right): q276's
-      // logistic propensity on (balance, season) PLUS per-arm linear
-      // outcome models m₁/m₀ fit closed-form by Cramer's rule on the
-      // 3×3 normal equations (Stats.ols2Beta) — ψ̂ = mean[m₁−m₀ +
-      // T(Y−m₁)/ê − (1−T)(Y−m₀)/(1−ê)]. Everything after the single
-      // orders⋈customer rollup is algebra on the SAME bounded
-      // (balance-grid, month, arm) cell table q276 builds: the corpus
-      // pays no extra pass for the second model — that is the point of
-      // sufficient-statistic modeling at 100 TB.
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      // customer is SF-linear: no forced broadcast — the join is
-      // equi-keyed on custkey and AQE picks the strategy by real size
-      val joined = o.join(c,
-        col("o_custkey") === col("c_custkey"))
-      val hist = operators.Materializer.Local(joined.select(
-          round(col("c_acctbal") / 1000.0, 1).as("u"),
-          month(col("o_orderdate")).cast("double").as("v"),
-          col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("tr"),
-          col("o_totalprice").cast("decimal(19,6)").as("y"))
-        .groupBy(col("u"), col("v"), col("tr"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("sumy")))
-      def pin6(cc: Column) = round(cc, 6).cast("decimal(29,6)")
-      val mom = hist.agg(sum(col("n")).as("nt"),
-        sum(pin6(col("u") * col("n"))).as("su"),
-        sum(pin6(col("u") * col("u") * col("n"))).as("suu"),
-        sum(pin6(col("v") * col("n"))).as("sv"),
-        sum(pin6(col("v") * col("v") * col("n"))).as("svv"))
-      val nD = col("nt").cast("double")
-      val mu = col("su").cast("double") / nD
-      val mv = col("sv").cast("double") / nD
-      val sdu = sqrt(col("suu").cast("double") / nD - mu * mu)
-      val sdv = sqrt(col("svv").cast("double") / nD - mv * mv)
-      val feats = operators.Materializer.Local(
-        hist.crossJoin(broadcast(mom))
-          .select(round((col("u") - mu) / sdu, 6).as("x1"),
-            round((col("v") - mv) / sdv, 6).as("x2"),
-            col("tr"), col("n"), col("sumy")))
-      val fit = operators.Stats.logisticGdHist(feats,
-        Seq("x1", "x2"), "tr", "n", rounds = 8, lr = 2.0)
-      val osums = feats.groupBy(col("tr")).agg(
-        sum(col("n")).as("n"),
-        sum(pin6(col("x1") * col("n"))).as("sx1"),
-        sum(pin6(col("x2") * col("n"))).as("sx2"),
-        sum(pin6(col("x1") * col("x1") * col("n"))).as("sx11"),
-        sum(pin6(col("x1") * col("x2") * col("n"))).as("sx12"),
-        sum(pin6(col("x2") * col("x2") * col("n"))).as("sx22"),
-        sum(col("sumy")).as("sy"),
-        sum(pin6(col("x1") * col("sumy").cast("double"))).as("sx1y"),
-        sum(pin6(col("x2") * col("sumy").cast("double"))).as("sx2y"))
-      val beta = operators.Stats.ols2Beta(osums, Seq("tr"))
-      val bt = beta.filter(col("tr")).select(col("b0").as("b0_t"),
-        col("b1").as("b1_t"), col("b2").as("b2_t"))
-      val bc = beta.filter(!col("tr")).select(col("b0").as("b0_c"),
-        col("b1").as("b1_c"), col("b2").as("b2_c"))
-      val phat = least(lit(0.99), greatest(lit(0.01),
-        lit(1.0) / (lit(1.0) + exp(-(col("w0") + col("w1") * col("x1")
-          + col("w2") * col("x2"))))))
-      val m1 = round(col("b0_t") + col("b1_t") * col("x1")
-        + col("b2_t") * col("x2"), 6)
-      val m0 = round(col("b0_c") + col("b1_c") * col("x1")
-        + col("b2_c") * col("x2"), 6)
-      val cells = feats
-        .crossJoin(broadcast(
-          fit.select(col("w0"), col("w1"), col("w2"))))
-        .crossJoin(operators.Hints.boundedBroadcast(bt, "arm_domain"))
-        .crossJoin(operators.Hints.boundedBroadcast(bc, "arm_domain"))
-        .select(col("n"), col("sumy"), col("tr"), col("b0_t"),
-          col("b0_c"), m1.as("m1"), m0.as("m0"), phat.as("e"))
-      val comb = cells.agg(sum(col("n")).as("nn"),
-        sum(when(col("tr"), col("n")).otherwise(0L)).as("n_t"),
-        sum(round(col("n").cast("double") * (col("m1") - col("m0"))
-          + when(col("tr"),
-            (col("sumy").cast("double")
-              - col("n").cast("double") * col("m1")) / col("e"))
-            .otherwise(-(col("sumy").cast("double")
-              - col("n").cast("double") * col("m0"))
-              / (lit(1.0) - col("e"))), 6).cast("decimal(29,6)"))
-          .as("psi"),
-        max(col("b0_t")).as("b0_t"), max(col("b0_c")).as("b0_c"))
-      comb.select(col("nn").cast("long").as("n"),
-        col("n_t").cast("long").as("n_t"),
-        col("b0_t"), col("b0_c"),
-        round(col("psi").cast("double") / col("nn").cast("double"), 6)
-          .as("ate_aipw"))
-    }),
-
-    "q280_rdd" -> ((s, dir) => {
-      // sharp regression-discontinuity estimate at the zero-balance
-      // cutoff (Thistlethwaite & Campbell 1960; Imbens & Lemieux 2008):
-      // local-linear fits of order value on account balance on each
-      // side of 0 within a ±1000 bandwidth, τ = the intercept gap at
-      // the cutoff, plus the McCrary-style density ratio in a ±250
-      // window (bunching at the cutoff invalidates the design). The
-      // balance filter pushes to the customer scan; one conditional
-      // sufficient-sums aggregate per side; the two 1-var OLS solves
-      // are scalar algebra. On this synthetic corpus τ ≈ 0 relative to
-      // the ~250k intercepts — the honest no-discontinuity readout.
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-        .filter(col("c_acctbal") > -1000.0 && col("c_acctbal") < 1000.0)
-      val j = operators.Materializer.Local(
-        // balance-trimmed but still SF-linear: unhinted equi-join
-        o.join(c, col("o_custkey") === col("c_custkey"))
-          .select(col("c_acctbal").cast("double").as("x"),
-            col("o_totalprice").cast("decimal(19,6)").as("y"),
-            (col("c_acctbal") >= 0).as("rt")))
-      val sums = j.groupBy(col("rt")).agg(
-        count(lit(1)).as("n"),
-        sum(round(col("x"), 2).cast("decimal(19,6)")).as("sx"),
-        sum(round(col("x") * col("x"), 4).cast("decimal(29,6)"))
-          .as("sxx"),
-        sum(col("y")).as("sy"),
-        sum(round(col("x") * col("y").cast("double"), 4)
-          .cast("decimal(29,6)")).as("sxy"))
-      val slope = round((col("n").cast("double")
-          * col("sxy").cast("double")
-          - col("sx").cast("double") * col("sy").cast("double"))
-        / (col("n").cast("double") * col("sxx").cast("double")
-          - col("sx").cast("double") * col("sx").cast("double")), 9)
-      val fit = sums.select(col("rt"), col("n"), slope.as("slope"),
-          col("sx"), col("sy"))
-        .select(col("rt"), col("n"), col("slope"),
-          round((col("sy").cast("double")
-            - col("slope") * col("sx").cast("double"))
-            / col("n").cast("double"), 6).as("icpt"))
-      val l = fit.filter(!col("rt")).select(col("n").as("n_l"),
-        col("icpt").as("icpt_l"), col("slope").as("slope_l"))
-      val r = fit.filter(col("rt")).select(col("n").as("n_r"),
-        col("icpt").as("icpt_r"), col("slope").as("slope_r"))
-      val dens = j.agg(
-        sum(when(!col("rt") && col("x") >= -250.0, 1L).otherwise(0L))
-          .as("d_l"),
-        sum(when(col("rt") && col("x") < 250.0, 1L).otherwise(0L))
-          .as("d_r"))
-      operators.Hints.boundedBroadcast(l, "arm_domain").crossJoin(operators.Hints.boundedBroadcast(r, "arm_domain"))
-        .crossJoin(broadcast(dens))
-        .select(col("n_l"), col("n_r"), col("icpt_l"), col("icpt_r"),
-          col("slope_l"), col("slope_r"),
-          round(col("icpt_r") - col("icpt_l"), 6).as("tau"),
-          col("d_l"), col("d_r"),
-          round(col("d_r").cast("double") / col("d_l").cast("double"),
-            6).as("density_ratio"))
-    }),
-
-    "q281_kneser_ney" -> ((s, dir) => {
-      // interpolated Kneser–Ney bigram cross-entropy on the held-out
-      // 25% (Kneser & Ney 1995; Chen & Goodman 1998) — the smoothing
-      // behind the KenLM quality filters (CCNet), upgrading q232's
-      // add-1 baseline: absolute-discount mass backs off to the
-      // CONTINUATION count N1+(·,w), so context-locked tokens stop
-      // soaking up backoff probability. Same q63/q232 hash split; one
-      // (w1,w2) exchange builds every model table; scoring is
-      // vocab-keyed equi-joins. On this corpus OOV = 0 (small closed
-      // vocabulary) and xent_kn ≈ 3.42 nats vs q232's add-1 readout —
-      // the model-quality gap KN exists to close.
-      operators.TextAnalysis.kneserNeyXent(t(s, dir, "documents"),
-        "doc_id", "text",
-        substring(md5(col("doc_id").cast("string")), 1, 1) < lit("c"))
-    }),
-
-    "q282_qlm_retrieval" -> ((s, dir) => {
-      // Dirichlet-smoothed query-likelihood ranking (Ponte & Croft
-      // 1998; Zhai & Lafferty 2001) for the same 3-term query as
-      // q138's BM25 — the language-modeling side of the classic
-      // lexical-ranking rivalry. Every document scores every term via
-      // the background model, but the score DECOMPOSES (matched-term
-      // adjustments + a 1-row scalar + per-doc length norm), so the
-      // plan is exactly BM25's: broadcast-trimmed postings, one
-      // bounded (doc,term) exchange, TakeOrdered — the |q|·N cross
-      // product never materializes.
-      operators.Retrieval.queryLikelihood(t(s, dir, "documents"),
-          "doc_id", "text", Seq("spark", "join", "window"),
-          mu = 100.0, topN = 20)
-        .orderBy(col("rk"))
-    }),
-
-    "q283_filter_ablation" -> ((s, dir) => {
-      // quality-filter ablation grid: document and token survival
-      // under every subset of three cheap quality gates (length ≥ 200
-      // chars, ≥ 60% alphabetic, ≥ 30 tokens) in ONE pass via CUBE —
-      // the pipeline-planning readout ("what does each filter cost,
-      // alone and stacked") that would otherwise take 2³ corpus
-      // passes. Flags are map-side integer compares (ratio as a
-      // cross-multiplication — no division, no ANSI zero-divide
-      // exposure); CUBE's Expand feeds one partial-combined aggregate.
-      val d = t(s, dir, "documents")
-      val tk = operators.TextAnalysis.tokens(col("text"))
-      val flagged = d.select(
-        (length(col("text")) >= 200).as("f_len"),
-        when(length(col("text")) > 0,
-          length(regexp_replace(col("text"), "[^A-Za-z]", "")) * 10
-            >= length(col("text")) * 6).otherwise(false).as("f_alpha"),
-        (size(tk) >= 30).as("f_tok"),
-        length(col("text")).cast("long").as("nc"),
-        size(tk).cast("long").as("ntk"))
-      val total = d.agg(count(lit(1)).as("tot"))
-      // cube keys surfaced as strings ('all' = the rolled-up margin):
-      // a null boolean round-trips differently through the two engines'
-      // parquet/pandas paths, a string key is bit-stable
-      flagged.cube(col("f_len"), col("f_alpha"), col("f_tok"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("nc")).as("n_chars"),
-          sum(col("ntk")).as("n_tokens"))
-        .crossJoin(broadcast(total))
-        .select(
-          coalesce(col("f_len").cast("string"), lit("all")).as("f_len"),
-          coalesce(col("f_alpha").cast("string"), lit("all"))
-            .as("f_alpha"),
-          coalesce(col("f_tok").cast("string"), lit("all")).as("f_tok"),
-          col("n_docs"), col("n_chars"), col("n_tokens"),
-          round(col("n_docs").cast("double")
-            / col("tot").cast("double"), 6).as("share"))
-        .orderBy(col("f_len"), col("f_alpha"), col("f_tok"))
-    }),
-
-    "q284_ope_snips" -> ((s, dir) => {
-      // off-policy evaluation of a greedy contextual policy (Horvitz &
-      // Thompson 1952 IPS; Swaminathan & Joachims 2015 SNIPS): train a
-      // per-context (6-hour bucket) greedy action on 75% of users,
-      // then estimate its value on held-out users' LOGGED traffic —
-      // IPS reweights matching rows by 1/p̂_log(a|ctx), SNIPS
-      // self-normalizes (trades a little bias for much less variance),
-      // DM reads the trained outcome table, and the on-policy held-out
-      // mean sits alongside as the sanity anchor. ESS says how many
-      // effective samples the weights left. ONE corpus rollup to
-      // (ctx, action, split) cells; policy, propensities, matching and
-      // every estimator are algebra on that ≤40-row table — the whole
-      // evaluation costs one exchange at any corpus size.
-      val ev = t(s, dir, "events")
-      val base = operators.Materializer.Local(ev.select(
-          expr("CAST(hour(ts) AS BIGINT) DIV 6").as("ctx"),
-          col("event_type").as("a"),
-          (substring(md5(concat(lit("ope|"),
-            col("user_id").cast("string"))), 1, 1) < lit("c"))
-            .as("is_train"),
-          col("value"))
-        .groupBy(col("ctx"), col("a"), col("is_train"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(19,6)")).as("sv")))
-      val tr = operators.Materializer.Local(base.filter(col("is_train"))
-        .select(col("ctx"), col("a"), col("n"),
-          round(col("sv").cast("double") / col("n").cast("double"), 9)
-            .as("mt")))
-      val trc = tr.groupBy(col("ctx")).agg(sum(col("n")).as("nc"))
-      val plog = tr.join(operators.Hints.boundedBroadcast(trc, "ctx_domain"), Seq("ctx"))
-        .select(col("ctx"), col("a"),
-          round(col("n").cast("double") / col("nc").cast("double"), 9)
-            .as("pl"))
-      val mx = tr.groupBy(col("ctx")).agg(max(col("mt")).as("mmax"))
-        .withColumnRenamed("ctx", "mctx")
-      // tr/held/plog/pol all descend from `base`, so `ctx` keeps ONE
-      // exprId through localCheckpoint — every join below renames its
-      // right side before joining instead of dataset-qualifying
-      val pol = tr.join(operators.Hints.boundedBroadcast(mx, "ctx_domain"),
-          col("ctx") === col("mctx") && col("mt") === col("mmax"))
-        .groupBy(col("ctx")).agg(min(col("a")).as("pi_a"))
-        .select(col("ctx").as("pctx"), col("pi_a"))
-      val held = base.filter(!col("is_train"))
-      val htot = held.agg(sum(col("n")).as("nh"), sum(col("sv"))
-        .as("svh"))
-      val ttot = base.filter(col("is_train"))
-        .agg(sum(col("n")).as("n_train"))
-      val w = round(lit(1.0) / col("pl"), 9)
-      val plogR = plog.select(col("ctx").as("lctx"), col("a").as("la"),
-        col("pl"))
-      val m = held.join(operators.Hints.boundedBroadcast(pol, "ctx_domain"),
-          col("ctx") === col("pctx") && col("a") === col("pi_a"))
-        .join(operators.Hints.boundedBroadcast(plogR, "ctx_domain"),
-          col("ctx") === col("lctx") && col("a") === col("la"))
-      def pinc(cc: Column) = round(cc, 6).cast("decimal(29,6)")
-      val ips = m.agg(
-        sum(pinc(col("sv").cast("double") * w)).as("swr"),
-        sum(pinc(col("n").cast("double") * w)).as("swn"),
-        sum(pinc(col("n").cast("double") * w * w)).as("swn2"))
-      val hc = held.groupBy(col("ctx")).agg(sum(col("n")).as("nhc"))
-      val trR = tr.select(col("ctx").as("tctx"), col("a").as("ta"),
-        col("mt"))
-      val dm = hc.join(operators.Hints.boundedBroadcast(pol, "ctx_domain"),
-          col("ctx") === col("pctx"))
-        .join(operators.Hints.boundedBroadcast(trR, "ctx_domain"),
-          col("ctx") === col("tctx") && col("pi_a") === col("ta"))
-        .agg(sum(pinc(col("nhc").cast("double") * col("mt")))
-          .as("sdm"))
-      ips.crossJoin(broadcast(dm)).crossJoin(broadcast(htot))
-        .crossJoin(broadcast(ttot))
-        .select(col("n_train").cast("long").as("n_train"),
-          col("nh").cast("long").as("n_held"),
-          round(col("svh").cast("double") / col("nh").cast("double"),
-            6).as("value_onpolicy"),
-          round(col("sdm").cast("double") / col("nh").cast("double"),
-            6).as("value_dm"),
-          round(col("swr").cast("double") / col("nh").cast("double"),
-            6).as("value_ips"),
-          round(col("swr").cast("double") / col("swn").cast("double"),
-            6).as("value_snips"),
-          round(col("swn").cast("double") * col("swn").cast("double")
-            / col("swn2").cast("double"), 6).as("ess"))
-    }),
-
-    "q285_bradley_terry" -> ((s, dir) => {
-      // Bradley–Terry paired-comparison strengths (Bradley & Terry 1952)
-      // fitted by Hunter's (2004) MM iterations — the model behind
-      // pairwise preference data (RLHF reward datasets, ranker evals).
-      // Comparisons: within each (user, day), every pair of event types
-      // the user touched "plays"; the higher summed value wins (exact
-      // DECIMAL compare, ties discarded). ONE corpus exchange to
-      // (user, day, type) cells; the pair join runs inside
-      // entity-bounded user-day groups (≤|types| rows each), and the MM
-      // loop is pure broadcast algebra on the ≤|types|² pair table —
-      // three rounds cost three ≤25-row joins at any corpus size. Each
-      // MM term requantizes to DECIMAL(19,9) before its sum, so
-      // partial-agg order can never flip a bit vs the oracle's unrolled
-      // replay.
-      val ev = t(s, dir, "events")
-      val ud = ev.select(col("user_id"),
-          date_trunc("day", col("ts")).as("d"),
-          col("event_type"), col("value"))
-        .groupBy(col("user_id"), col("d"), col("event_type"))
-        .agg(sum(col("value").cast("decimal(19,6)")).as("sv"))
-      val pa = ud.select(col("user_id"), col("d"),
-        col("event_type").as("i"), col("sv").as("sva"))
-      val pb = ud.select(col("user_id"), col("d"),
-        col("event_type").as("j"), col("sv").as("svb"))
-      val pair = pa.join(pb, Seq("user_id", "d"))
-        .filter(col("i") < col("j") && col("sva") =!= col("svb"))
-        .groupBy(col("i"), col("j"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("sva") > col("svb"), 1L).otherwise(0L)).as("wi"),
-          sum(when(col("svb") > col("sva"), 1L).otherwise(0L)).as("wj"))
-      operators.Stats.bradleyTerry(pair, rounds = 3)
-        .withColumnRenamed("i", "event_type")
-        .orderBy(col("strength").desc, col("event_type"))
-    }),
-
-    "q288_feature_hash_audit" -> ((s, dir) => {
-      // feature-hashing collision audit (Weinberger et al., ICML 2009):
-      // the hashing trick maps an unbounded vocabulary into d buckets;
-      // this measures what that costs on THIS corpus at d = 256 and
-      // d = 4096 — terms colliding, buckets occupied, and the share of
-      // total token MASS sitting in collided buckets (the quantity that
-      // actually hurts a downstream linear model). ONE (term) exchange
-      // builds the vocab frequency table; each d is then a groupBy on
-      // that vocab-scale table (vocab grows Heaps-sublinearly at
-      // 100 TB). Bucket = the portable md5-hex-prefix integer, the
-      // engine-shared hash convention.
-      val tf = operators.Materializer.Local(t(s, dir, "documents")
-        .select(explode(operators.TextAnalysis.tokens(col("text")))
-          .as("tk"))
-        .groupBy(col("tk")).agg(count(lit(1)).as("freq")))
-      def audit(d: Int): DataFrame = {
-        val bkt = pmod(conv(substring(md5(col("tk")), 1, 8), 16, 10)
-          .cast("long"), lit(d.toLong))
-        tf.groupBy(bkt.as("bucket"))
-          .agg(count(lit(1)).as("nt"), sum(col("freq")).as("bf"))
-          .agg(sum(col("nt")).cast("long").as("n_terms"),
-            count(lit(1)).cast("long").as("buckets_used"),
-            sum(when(col("nt") >= 2, col("nt")).otherwise(0L))
-              .cast("long").as("collided_terms"),
-            max(col("nt")).cast("long").as("max_bucket_terms"),
-            round(sum(when(col("nt") >= 2, col("bf")).otherwise(0L))
-                .cast("double") / sum(col("bf")).cast("double"), 6)
-              .as("collision_mass"))
-          .select(lit(d.toLong).as("dims"), col("n_terms"),
-            col("buckets_used"), col("collided_terms"),
-            col("max_bucket_terms"), col("collision_mass"))
-      }
-      audit(256).unionAll(audit(4096)).orderBy(col("dims"))
-    }),
-
-    "q290_rbo_rankers" -> ((s, dir) => {
-      // rank-biased overlap (Webber, Moffat & Zobel, TOIS 2010) between
-      // the BM25 (q138) and Dirichlet-QLM (q282) top-10 rankings for
-      // three queries — the standard top-weighted agreement measure for
-      // indefinite rankings, here the "do my two retrievers see the
-      // same corpus" monitor. Truncated RBO@10 decomposes per SHARED
-      // doc: a doc first covered at depth m = max(rank_a, rank_b)
-      // contributes c(m) = (1-p)·Σ_{d=m..10} p^(d-1)/d, so the whole
-      // measure is one broadcast join against the 10-row c(m) constant
-      // table (decimal strings shared VERBATIM with the oracle) plus an
-      // exact DECIMAL sum over ≤10 matched rows per query. The rankings
-      // themselves reuse the bounded-postings BM25/QLM plans.
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val sets = Seq(("q1", Seq("spark", "join", "window")),
-        ("q2", Seq("merge", "sort", "hash")),
-        ("q3", Seq("scan", "filter", "batch")))
-      // batch rankers: ONE shared postings pass for all three labels
-      // AND both rankers (r14: BM25 and QLM trim to the same term union
-      // over the same corpus, so the corpus is tokenized once, not
-      // twice), bit-identical per label to the single-query operators
-      // (q138's and q282's oracles pin those; RBO's oracle replays per
-      // label)
-      val shared = operators.Retrieval.trimmedPostings(docs, "doc_id",
-        "text", sets.flatMap(_._2).distinct)
-      val a = operators.Retrieval.bm25Batch(docs, "doc_id", "text",
-          sets, k1 = 1.2, b = 0.75, topN = 10, postings = Some(shared))
-        .select(col("q"), col("doc_id"), col("rk").as("ra"))
-      val b = operators.Retrieval.queryLikelihoodBatch(docs, "doc_id",
-          "text", sets, mu = 100.0, topN = 10, postings = Some(shared))
-        .select(col("q"), col("doc_id"), col("rk").as("rb"))
-      val w = rboWeights.toDF("m", "c")
-      a.join(b, Seq("q", "doc_id"))
-        .select(col("q"), greatest(col("ra"), col("rb")).as("m"))
-        .join(broadcast(w), Seq("m"))
-        .groupBy(col("q"))
-        .agg(count(lit(1)).cast("long").as("n_common"),
-          round(sum(col("c").cast("decimal(14,12)")).cast("double"), 6)
-            .as("rbo"))
-        .orderBy(col("q"))
-    }),
-
-    "q286_nn_descent" -> ((s, dir) => {
-      // NN-descent k-NN graph (Dong et al., WWW 2011) — the graph-ANN
-      // build step, model-free where IVF/PQ (q46/q72/q77) train: 3
-      // cross-cutting md5-bucket spaces seed a CONNECTED random graph,
-      // then 3 rounds of "my neighbors' neighbors", each one id-keyed
-      // equi-join + entity-bounded rank windows. Output: per-query
-      // recall of the k=10 graph's edges against the exact top-5 (the
-      // q40 ground truth) for vec_id < 30 — the build-quality readout
-      // an ANN deployment gates on. On THIS corpus's near-random
-      // embeddings the descent climbs 0.32→0.60→0.79 over the rounds —
-      // the honest convergence the paper shows on structured data.
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      val g = Similarity.nnDescentGraph(emb, k = 10, rounds = 3)
-      val truth = Similarity.bruteForceTopK(emb,
-          emb.filter(col("vec_id") < 30), k = 5, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-      truth
-        .join(g.select(col("v").as("query_id"),
-            col("u").as("neighbor_id"), lit(1L).as("hit")),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("long").as("found"))
-        .select(col("query_id"), col("found"),
-          round(col("found").cast("double") / lit(5.0), 6).as("recall"))
-        .orderBy(col("query_id"))
-    }),
-
-    "q287_mink_membership" -> ((s, dir) => {
-      // Min-K% membership / memorization audit (Shi et al., ICLR 2024)
-      // over the corpus add-α (α=0.5) bigram LM: score = mean surprisal of each
-      // doc's 20% least-probable bigram types. Text the model finds
-      // likely even at its WORST tokens reads as a training-set member /
-      // memorized duplicate; novel text keeps the fat high-surprisal
-      // tail the plain mean (returned alongside) averages away. Same
-      // plan as the surprisal family: one (doc, bigram) exchange,
-      // token-keyed model joins, per-doc entity-bounded window.
-      operators.TextAnalysis.minKSurprisal(t(s, dir, "documents"),
-          "doc_id", "text", alpha = 0.5, kFrac = 5)
-        .orderBy(col("doc_id"))
-    }),
-
-    "q291_cf_eval" -> ((s, dir) => {
-      // leave-last-basket-out evaluation of q270's item-item CF
-      // (the Cremonesi/Koren/Turrin RecSys 2010 eval shape): hold out
-      // each multi-order customer's LAST order, train co-occurrence
-      // cosine neighbors on the prefix orders only (no leakage),
-      // recommend top-10 by profile-summed cosine with owned items
-      // excluded, and read out hit-rate@10 — the offline number a
-      // recommender ships or doesn't ship on. Every stage is a keyed
-      // join or an entity-bounded window (per-customer order rank,
-      // per-item neighbor rank, per-customer rec rank); scores are
-      // sums of round(9) DECIMAL cosines, so ranking never sits on a
-      // float ulp.
-      import org.apache.spark.sql.expressions.Window
-      val wOrd = Window.partitionBy(col("cust"))
-        .orderBy(col("o_orderdate").desc, col("ok").desc)
-      val ranked = t(s, dir, "orders")
-        .select(col("o_custkey").as("cust"), col("o_orderkey").as("ok"),
-          col("o_orderdate"))
-        .withColumn("ork", row_number().over(wOrd))
-        .withColumn("n_orders",
-          count(lit(1)).over(Window.partitionBy(col("cust"))))
-        .filter(col("n_orders") >= 2)
-      val items = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-      val trainB = operators.Materializer.Local(
-        ranked.filter(col("ork") > 1).select(col("cust"), col("ok"))
-          .join(items, Seq("ok")).select(col("cust"), col("ok"),
-            col("pk")))
-      val testI = ranked.filter(col("ork") === 1)
-        .select(col("cust"), col("ok"))
-        .join(items, Seq("ok")).select(col("cust"), col("pk")).distinct()
-      // kept as the self-join formulation (r13 measured: the basket-
-      // aggregation rewrite + a baskets checkpoint REGRESSED this query
-      // ~+1.3 s — trainB is already materialized, so exchange reuse
-      // covers the references and the collect_list pass is pure cost
-      // here, unlike q163/q205 where it replaced un-reused self-joins)
-      val baskets = trainB.select(col("ok"), col("pk")).distinct()
-      val nI = baskets.groupBy(col("pk")).agg(count(lit(1)).as("cnt"))
-      val pairs = baskets
-        .join(baskets.select(col("ok"), col("pk").as("pk2")), Seq("ok"))
-        .filter(col("pk") < col("pk2"))
-        .groupBy(col("pk"), col("pk2")).agg(count(lit(1)).as("co"))
-        .filter(col("co") >= 2)
-      val sym = pairs
-        .select(col("pk").as("a"), col("pk2").as("b"), col("co"))
-        .unionByName(pairs
-          .select(col("pk2").as("a"), col("pk").as("b"), col("co")))
-      val wN = Window.partitionBy(col("a"))
-        .orderBy(col("cos").desc, col("b").asc)
-      val nbrs = sym
-        // unhinted like q270: nI is per-part (SF-linear); equi-keyed on
-        // the part id, AQE broadcasts only when genuinely small. b-margin
-        // first, a-margin last, so the rank window (partitioned by a)
-        // reuses the final join exchange (see q270)
-        .join(nI.select(col("pk").as("b"), col("cnt").as("nb")),
-          Seq("b"))
-        .join(nI.select(col("pk").as("a"), col("cnt").as("na")),
-          Seq("a"))
-        .select(col("a"), col("b"),
-          round(col("co").cast("double") /
-            sqrt(col("na").cast("double") * col("nb").cast("double")),
-            9).as("cos"))
-        .withColumn("nrk", row_number().over(wN))
-        .filter(col("nrk") <= 5)
-      val prof = trainB.select(col("cust"), col("pk")).distinct()
-      val wR = Window.partitionBy(col("cust"))
-        .orderBy(col("score").desc, col("rec").asc)
-      val top = prof
-        .join(nbrs.select(col("a").as("pk"), col("b").as("rec"),
-          col("cos")), Seq("pk"))
-        .groupBy(col("cust"), col("rec"))
-        .agg(sum(col("cos").cast("decimal(19,9)")).as("score"))
-        .join(prof.select(col("cust"), col("pk").as("rec")),
-          Seq("cust", "rec"), "left_anti")
-        .withColumn("rrk", row_number().over(wR))
-        .filter(col("rrk") <= 10)
-      val hits = top
-        .join(testI.select(col("cust"), col("pk").as("rec"),
-          lit(1L).as("hit")), Seq("cust", "rec"), "left")
-        .groupBy(col("cust"))
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      hits.agg(count(lit(1)).as("users_eval"),
-          sum(when(col("n_hits") > 0, 1L).otherwise(0L)).as("users_hit"),
-          sum(col("n_hits")).as("total_hits"))
-        .select(col("users_eval").cast("long").as("users_eval"),
-          col("users_hit").cast("long").as("users_hit"),
-          round(col("users_hit").cast("double")
-            / col("users_eval").cast("double"), 6).as("hit_rate"),
-          round(col("total_hits").cast("double")
-            / col("users_eval").cast("double"), 6).as("mean_hits"))
-    }),
-
-    "q292_index_bits" -> ((s, dir) => {
-      // inverted-index compression estimate (Elias 1975 gamma/delta
-      // gap codes; the Witten–Moffat–Bell "Managing Gigabytes"
-      // accounting): posting lists as sorted doc-id gaps, code lengths
-      // as EXACT integer binary-digit counts (both engines render the
-      // same minimal binary string), rolled up by df bucket — the
-      // "how big will this index be, and which terms dominate it"
-      // readout that prices a retrieval deployment. ONE (term, doc)
-      // exchange; the gap window partitions per term (the Zipf head's
-      // long posting list in one partition is the same skew a real
-      // index build pays).
-      import org.apache.spark.sql.expressions.Window
-      val wt = Window.partitionBy(col("tk")).orderBy(col("doc_id").asc)
-      val post = t(s, dir, "documents")
-        .select(explode(operators.TextAnalysis.tokens(col("text")))
-          .as("tk"), col("doc_id"))
-        .distinct()
-      val gaps = post
-        .withColumn("gap", coalesce(
-          col("doc_id") - lag(col("doc_id"), 1).over(wt),
-          col("doc_id") + lit(1L)))
-        .withColumn("df",
-          count(lit(1)).over(Window.partitionBy(col("tk"))))
-      val lb = length(conv(col("gap"), 10, 2)).cast("long")
-      val lbl = length(conv(lb, 10, 2)).cast("long")
-      val bucket = when(col("df") <= 1, "df=1")
-        .when(col("df") <= 10, "df=2-10")
-        .when(col("df") <= 100, "df=11-100")
-        .otherwise("df>100")
-      gaps.select(bucket.as("df_bucket"), col("tk"),
-          (lb * 2 - 1).as("gb"), (lb + lbl * 2 - 2).as("db"))
-        .groupBy(col("df_bucket"))
-        .agg(countDistinct(col("tk")).as("n_terms"),
-          count(lit(1)).as("n_postings"),
-          sum(col("gb")).as("gamma_bits"),
-          sum(col("db")).as("delta_bits"))
-        .select(col("df_bucket"), col("n_terms"), col("n_postings"),
-          col("gamma_bits"), col("delta_bits"),
-          round(col("gamma_bits").cast("double")
-            / (col("n_postings") * 32).cast("double"), 6)
-            .as("gamma_vs_fixed32"))
-        .orderBy(col("df_bucket"))
-    }),
-
-    "q293_cluster_stability" -> ((s, dir) => {
-      // community stability audit: q154's label-prop communities
-      // recomputed on two md5-disjoint EDGE halves of the co-purchase
-      // graph, agreement scored by Adjusted Rand Index (Hubert &
-      // Arabie 1985) over nodes labeled in both halves — the "are
-      // these clusters real structure or sampling noise" gate that
-      // complements q226's modularity (strength) with robustness.
-      // Doubled pair counts keep the ARI algebra exact-integer until
-      // one pinned double expression; the contingency table is
-      // bounded at |labels|².
-      // materialized ONCE: each half's labelPropagation otherwise
-      // re-executes the full co-purchase pair build + support aggregate
-      // (the query's dominant cost) behind its filter — pinning the
-      // edge set halves that work; results identical
-      val edges = operators.Materializer.Local(
-        copurchasePairCounts(t(s, dir, "lineitem"))
-          .filter(col("cm") >= 2)
-          .select(col("pa").as("src"), col("pb").as("dst"),
-            (substring(md5(concat(lit("ari|"),
-              col("pa").cast("string"), lit("|"),
-              col("pb").cast("string"))), 1, 1) < lit("8")).as("half_a")))
-      val seeds = t(s, dir, "part")
-        .filter(col("p_partkey") % 5 === 0)
-        .select(col("p_partkey").as("node"), col("p_brand").as("label"))
-      val la = operators.Graph.labelPropagation(
-        edges.filter(col("half_a")).select(col("src"), col("dst")),
-        seeds, rounds = 3)
-      val lb2 = operators.Graph.labelPropagation(
-        edges.filter(!col("half_a")).select(col("src"), col("dst")),
-        seeds, rounds = 3)
-      val both = la.select(col("node"), col("label").as("la"))
-        .join(lb2.select(col("node"), col("label").as("lb")),
-          Seq("node"))
-      operators.Stats.adjustedRandIndex(both, "la", "lb")
-    }),
-
-    "q297_voptimal_hist" -> ((s, dir) => {
-      // V-optimal histogram over order totals — the optimizer-ANALYZE
-      // bucketing (Jagadish et al., VLDB 1998) that q152's equi-width
-      // and q51's equi-depth approximate: value domain compresses to a
-      // 32-point equi-rank grid (exact integer rank thresholds off the
-      // cents histogram — the standard two-level construction), then
-      // Stats.vOptimalDp partitions the grid frequency sequence into
-      // k=4 buckets minimizing within-bucket SSE. The corpus pays one
-      // value-histogram exchange; grid selection, the DP and the
-      // backtrack are all bounded-table algebra.
-      val (grid, freqs) = orderGridFreqs(s, dir)
-      operators.Stats.vOptimalDp(freqs, g = 32, k = 4)
-        .join(operators.Hints.boundedBroadcast(grid.select(col("t").as("seg_hi"),
-          col("gv").as("v_hi")), "grid_g_rows"), Seq("seg_hi"))
-        .select(col("bucket").cast("long").as("bucket"),
-          col("seg_lo").cast("long").as("seg_lo"),
-          col("seg_hi").cast("long").as("seg_hi"),
-          col("v_hi"), col("n_rows"), col("sse"))
-        .orderBy(col("bucket"))
-    }),
-
-    "q303_curation_ablation" -> ((s, dir) => {
-      // does the q300 funnel BUY anything? — the in-engine curation
-      // ablation: two add-1 bigram LMs, one trained on the raw 75%
-      // hash-split, one on that split ∩ funnel survivors (stage 7),
-      // both scored on the SAME fixed held-out set (the 25% split's
-      // gates-passing docs), corpus-level cross-entropy per model —
-      // the experiment that justifies (or kills) each pipeline stage
-      // before anyone trains a real model. Survivorship comes from one
-      // shared funnel pass; each model is the q232 chain over its
-      // train slice; eval bigrams are computed once and re-scored per
-      // model via token-keyed LEFT joins.
-      val cum = funnelCum(s, dir)
-      val isTrain = substring(md5(concat(lit("cur|"),
-        col("doc_id").cast("string"))), 1, 1) < lit("c")
-      val base = operators.Materializer.Local(t(s, dir, "documents")
-        .select(col("doc_id"),
-          operators.TextAnalysis.tokens(col("text")).as("tk"),
-          isTrain.as("is_train"))
-        .join(cum.select(col("doc_id"), col("c2"), col("c7")),
-          Seq("doc_id")))
-      // ONE corpus bigram pass with the slice flags carried through the
-      // per-doc grouping (r14, §2.4 fewer passes): bigrams are per-doc
-      // and every slice (eval, curated-train, raw-train) is a per-doc
-      // flag filter, so `bigrams(slice)` == `bigrams(all).filter(flags)`
-      // — this replaces the THREE per-slice tokenize+zip+explode+count
-      // passes the query used to pay. FanOut re-widens the checkpointed
-      // base (AQE sizes it by bytes; the explode+count below is the
-      // per-row-expensive consumer).
-      val bgAll = operators.Materializer.Local(
-        operators.FanOut(base).select(col("doc_id"), col("is_train"),
-          col("c2"), col("c7"),
-          explode(when(size(col("tk")) >= 2,
-            zip_with(
-              slice(col("tk"), lit(1),
-                greatest(size(col("tk")) - 1, lit(1))),
-              slice(col("tk"), lit(2),
-                greatest(size(col("tk")) - 1, lit(1))),
-              (a, b) => struct(a.as("w1"), b.as("w2"))))
-            .otherwise(array()
-              .cast("array<struct<w1:string,w2:string>>"))).as("bg"))
-        .groupBy(col("doc_id"), col("is_train"), col("c2"), col("c7"),
-          col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-        .agg(count(lit(1)).as("tf")))
-      val evalBg = bgAll.filter(!col("is_train") && col("c2"))
-      // both models' vocab sizes in ONE token pass (countDistinct skips
-      // the NULLs the when() assigns to out-of-slice tokens — identical
-      // to the former per-slice countDistinct)
-      val vRow = base.select(explode(col("tk")).as("tok"),
-          col("is_train"), col("c7"))
-        .agg(
-          countDistinct(when(col("is_train") && col("c7"), col("tok")))
-            .as("v_cur"),
-          countDistinct(when(col("is_train"), col("tok"))).as("v_raw"))
-        .collect()(0)
-      def model(name: String, trBg: DataFrame, v: Double,
-                nTrain: Long): DataFrame = {
-        val c2m = trBg.groupBy(col("w1"), col("w2"))
-          .agg(sum(col("tf")).cast("long").as("c2m"))
-        val c1m = trBg.groupBy(col("w1"))
-          .agg(sum(col("tf")).cast("long").as("c1m"))
-        val lp = log((coalesce(col("c2m"), lit(0L)).cast("double")
-            + lit(1.0))
-          / (coalesce(col("c1m"), lit(0L)).cast("double") + lit(v)))
-        evalBg
-          .join(c2m, Seq("w1", "w2"), "left")
-          .join(c1m, Seq("w1"), "left")
-          .agg(countDistinct(col("doc_id")).as("n_eval_docs"),
-            sum(col("tf")).cast("long").as("n_eval_bigrams"),
-            round(-sum((col("tf").cast("double") * lp)
-                .cast("decimal(38,6)")).cast("double")
-              / sum(col("tf")).cast("double"), 6).as("cross_entropy"))
-          .select(lit(name).as("model"),
-            lit(nTrain).as("n_train_docs"),
-            col("n_eval_docs").cast("long").as("n_eval_docs"),
-            col("n_eval_bigrams"), col("cross_entropy"))
-      }
-      model("curated",
-          bgAll.filter(col("is_train") && col("c7")),
-          vRow.getLong(0).toDouble,
-          base.filter(col("is_train") && col("c7")).count())
-        .unionAll(model("raw",
-          bgAll.filter(col("is_train")),
-          vRow.getLong(1).toDouble,
-          base.filter(col("is_train")).count()))
-        .orderBy(col("model"))
-    }),
-
-    "q304_weighted_neardup" -> ((s, dir) => {
-      // tf-WEIGHTED near-dup pairs via Ioffe consistent sampling
-      // (weighted MinHash, ICDM 2010) — the round-6 backlog item: where
-      // q37's set MinHash sees a 50×-repeated term once, the CWS sampler
-      // collides with probability Σmin(w)/Σmax(w), so repetition-heavy
-      // near-dups rank by their true weighted overlap. k=8 samples in 4
-      // LSH bands generate candidates; the verify is exact integer
-      // weighted Jaccard ≥ 3/5. The md5-seeded Gamma(2,1)/Uniform draws
-      // are salted-md5 functions of (term, seed), so DuckDB replays the
-      // sampler draw-for-draw (round(9) requantization after every libm
-      // call, arg-min tie-break on term asc).
-      GraftFunctions.register(s) // the verify's native map_min_sum
-      Dedup.weightedMinhashPairs(t(s, dir, "documents"), "doc_id",
-          "text", k = 8, bands = 4, thetaNum = 3, thetaDen = 5)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q305_voptimal_merge" -> ((s, dir) => {
-      // distributed ANALYZE (q297's extension, the round-7 backlog
-      // item): the corpus is row-sharded 4 ways (deterministic md5 on
-      // the order key — the q95 idiom), each shard ships its EXACT
-      // quantized value histogram (the mergeable synopsis: level-1
-      // cents quantization bounds the per-shard state at the domain
-      // size, never rows), the coordinator merges with one associative
-      // Σc-by-v aggregation, and the 32-point equi-rank grid + k=4 SSE
-      // DP re-run on the merged histogram (Stats.vOptimalMerged). The
-      // output certifies bucket-for-bucket equality against the direct
-      // single-pass construction — the property that makes per-shard
-      // histograms the RIGHT distributed synopsis where merged
-      // per-shard GRIDS would lose within-cell mass.
-      val vals = t(s, dir, "orders").select(
-        operators.Sharding.shardOf("o_orderkey", 4).as("shard"),
-        (col("o_totalprice") * 100).cast("long").as("v"))
-      // materialized: referenced by BOTH the merge path and (via the
-      // exact Σc-by-v roll-up below) the direct path
-      val shardHists = operators.Materializer.Local(
-        vals.groupBy(col("shard"), col("v"))
-          .agg(count(lit(1)).as("c")))
-      val merged = operators.Stats.vOptimalMerged(shardHists, g = 32,
-        k = 4)
-      // the DIRECT construction's value histogram = the exact integer
-      // Σc-by-v merge of the shard histograms (identical to a second
-      // corpus scan + groupBy(v), which this replaces — one orders scan
-      // for the whole query instead of two)
-      val (grid, freqs) = operators.Stats.equiRankGridFreqs(
-        shardHists.groupBy(col("v")).agg(sum(col("c")).as("c")), g = 32)
-      val direct = operators.Stats.vOptimalDp(freqs, g = 32, k = 4)
-        .join(operators.Hints.boundedBroadcast(grid.select(col("t").as("seg_hi"),
-          col("gv").as("v_hi")), "grid_g_rows"), Seq("seg_hi"))
-        .select(col("bucket"), col("seg_lo"), col("seg_hi"),
-          col("v_hi"), col("n_rows"), col("sse"))
-      direct
-        .join(merged.select(col("bucket"),
-          col("seg_lo").as("m_seg_lo"), col("seg_hi").as("m_seg_hi"),
-          col("v_hi").as("m_v_hi"), col("n_rows").as("m_n_rows"),
-          col("sse").as("m_sse")), Seq("bucket"), "full")
-        .select(col("bucket").cast("long").as("bucket"),
-          col("seg_lo").cast("long").as("seg_lo"),
-          col("seg_hi").cast("long").as("seg_hi"),
-          col("v_hi"), col("n_rows"), col("sse"),
-          col("m_seg_lo").cast("long").as("m_seg_lo"),
-          col("m_seg_hi").cast("long").as("m_seg_hi"),
-          col("m_v_hi"), col("m_n_rows"), col("m_sse"),
-          ((col("seg_lo") <=> col("m_seg_lo")) &&
-            (col("seg_hi") <=> col("m_seg_hi")) &&
-            (col("v_hi") <=> col("m_v_hi")) &&
-            (col("n_rows") <=> col("m_n_rows")) &&
-            (col("sse") <=> col("m_sse"))).as("merge_exact"))
-        .orderBy(col("bucket"))
-    }),
-
-    "q306_grid_merge_audit" -> ((s, dir) => {
-      // the LOSSY companion to q305: when even the quantized domain is
-      // too wide to ship, each shard sends only its g-point equi-rank
-      // grid (O(g) state) and the coordinator merges by uniform
-      // within-cell interpolation over the union boundaries
-      // (Stats.mergedGridIntervals). This query prices that loss: the
-      // selectivity P(v > X) read off the merged synopsis vs the exact
-      // corpus count, at the three mid-grid thresholds of the direct
-      // construction (t = 8, 16, 24) — the q299-style consumer audit,
-      // now for the distributed-merge estimator. The only corpus work
-      // is the shard histogram and the audit's own exact count.
-      val vals = t(s, dir, "orders").select(
-        operators.Sharding.shardOf("o_orderkey", 4).as("shard"),
-        (col("o_totalprice") * 100).cast("long").as("v"))
-      // ONE corpus scan for the whole query: the shard histogram is
-      // materialized once, and both the exact corpus histogram (Σc-by-v,
-      // exact integer merge — identical to a fresh scan + groupBy(v))
-      // and the direct-construction grid derive from it, replacing the
-      // three separate orders scans this query used to pay
-      val shardHists = operators.Materializer.Local(
-        vals.groupBy(col("shard"), col("v"))
-          .agg(count(lit(1)).as("c")))
-      val iv = operators.Materializer.Local(
-        operators.Stats.mergedGridIntervals(shardHists, 32))
-      val hist = operators.Materializer.Local(
-        shardHists.groupBy(col("v")).agg(sum(col("c")).as("c")))
-      val (grid, _) = operators.Stats.equiRankGridFreqs(hist, g = 32)
-      val thr3 = grid.filter(col("t").isin(8, 16, 24))
-        .select(col("t").as("t_ref"), col("gv").as("x"))
-      val nTot = hist.agg(sum(col("c")).as("n"))
-      val exact = thr3.join(hist, col("v") > col("x"), "left")
-        .groupBy(col("t_ref"), col("x"))
-        .agg(coalesce(sum(col("c")), lit(0L)).as("egt"))
-      // merged-side numerator: full intervals above X contribute their
-      // whole mass, the one straddling interval contributes its uniform
-      // slice — every term requantized round(9) -> DECIMAL(19,9) before
-      // the sum (order-independent, oracle-replayable)
-      val contrib = when(col("a") >= col("x"),
-          col("mass").cast("decimal(19,9)"))
-        .when(col("b") > col("x"),
-          round(col("mass") * (col("b") - col("x")).cast("double")
-            / (col("b") - col("a")).cast("double"), 9)
-            .cast("decimal(19,9)"))
-        .otherwise(lit(0).cast("decimal(19,9)"))
-      val merged = thr3.crossJoin(iv)
-        .groupBy(col("t_ref"), col("x"))
-        .agg(sum(contrib).as("mgt"))
-      val nm = iv.agg(sum(col("mass").cast("decimal(19,9)")).as("nmass"))
-      exact.join(merged, Seq("t_ref", "x"))
-        .crossJoin(broadcast(nTot)).crossJoin(broadcast(nm))
-        .select(col("t_ref").cast("long").as("t_ref"),
-          col("x").as("threshold_v"),
-          round(col("egt").cast("double") / col("n").cast("double"), 6)
-            .as("exact_gt_frac"),
-          round(col("mgt").cast("double") / col("nmass").cast("double"),
-            6).as("merged_gt_frac"),
-          // degenerate-threshold guard: if the exact count above a
-          // threshold is 0 (a corpus whose top grid cell collapses onto
-          // the max value), relative error is undefined — emit NULL
-          // instead of Infinity/NaN, which would break the JSON/hash
-          // protocol. Safe-by-shape on TPC-H-like data, guarded anyway.
-          when(col("egt") > 0,
-            round(abs(col("mgt").cast("double")
-                / col("nmass").cast("double")
-              - col("egt").cast("double") / col("n").cast("double"))
-              / (col("egt").cast("double") / col("n").cast("double")), 6))
-            .as("rel_err"))
-        .orderBy(col("t_ref"))
-    }),
-
-    "q307_leakage_safe_split" -> ((s, dir) => {
-      // leakage-safe train/test split: every document inherits its
-      // near-dup CLUSTER's hash split (Dedup.clusterAwareSplit), so a
-      // confirmed near-dup pair can never straddle train and test — the
-      // eval-contamination mode q63's per-doc hash split cannot prevent
-      // (a test doc with a near-verbatim twin in train leaks even after
-      // exact dedup). The audit prices it: straddling-pair counts under
-      // the cluster-blind assignment vs the cluster-aware one (0 by
-      // construction — pair endpoints share a component). Pairs from the
-      // fast-FNV LSH path, whose confirmed set equals ground truth on
-      // this corpus (q39); straddle counts are two id-keyed equi-joins
-      // of the bounded pair set against the assignment table, and the
-      // only broadcasts are 1-row aggregates.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val pairs = operators.Materializer.Local(
-        Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16, bands = 4,
-          shingleN = 3, threshold = 0.5, fast = true)
-          .select(col("a_id"), col("b_id")))
-      val asg = operators.Materializer.Local(
-        Dedup.clusterAwareSplit(docs, pairs, "doc_id"))
-      def audit(splitCol: String, m: String) = {
-        val sa = asg.select(col("doc_id").as("a_id"), col(splitCol).as("sa"))
-        val sb = asg.select(col("doc_id").as("b_id"), col(splitCol).as("sb"))
-        val strad = pairs.join(sa, Seq("a_id")).join(sb, Seq("b_id"))
-          .agg(coalesce(sum(when(col("sa") =!= col("sb"), 1L)
-            .otherwise(0L)), lit(0L)).as("n_straddle"))
-        asg.agg(
-            sum(when(col(splitCol) === "train", 1L).otherwise(0L))
-              .as("n_train"),
-            sum(when(col(splitCol) === "test", 1L).otherwise(0L))
-              .as("n_test"))
-          .crossJoin(broadcast(strad))
-          .select(lit(m).as("method"), col("n_train"), col("n_test"),
-            col("n_straddle"))
-      }
-      audit("naive_split", "naive_by_doc")
-        .unionByName(audit("split", "by_cluster"))
-        .orderBy(col("method"))
-    }),
-
-    "q308_split_stratification" -> ((s, dir) => {
-      // the q307 follow-up a curation pipeline asks next: cluster-keyed
-      // hashing moves WHOLE near-dup groups between splits, so if
-      // clusters correlate with a stratum the leakage-safe split can
-      // skew the mixture. Per source: train share under the naive and
-      // cluster-aware assignments plus each share's absolute deviation
-      // from its method's corpus-wide share — the stratification audit
-      // that says whether leakage safety cost mixture fidelity. One
-      // pair+CC pass (the shared clusterAwareSplit operator), two
-      // partial-combined aggregates; the overall shares ride a 1-row
-      // broadcast.
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
-          bands = 4, shingleN = 3, threshold = 0.5, fast = true)
-        .select(col("a_id"), col("b_id"))
-      val asg = operators.Materializer.Local(
-        Dedup.clusterAwareSplit(docs, pairs, "doc_id")
-          .join(docs.select(col("doc_id"), col("source")), Seq("doc_id")))
-      def tr(c: String) = sum(when(col(c) === "train", 1L).otherwise(0L))
-      val per = asg.groupBy(col("source")).agg(
-        count(lit(1)).as("n_docs"),
-        round(tr("naive_split").cast("double") / count(lit(1)), 6)
-          .as("train_frac_naive"),
-        round(tr("split").cast("double") / count(lit(1)), 6)
-          .as("train_frac_cluster"))
-      val overall = asg.agg(
-        round(tr("naive_split").cast("double") / count(lit(1)), 6)
-          .as("o_naive"),
-        round(tr("split").cast("double") / count(lit(1)), 6)
-          .as("o_cluster"))
-      per.crossJoin(broadcast(overall))
-        .select(col("source"), col("n_docs"),
-          col("train_frac_naive"), col("train_frac_cluster"),
-          round(abs(col("train_frac_naive") - col("o_naive")), 6)
-            .as("dev_naive"),
-          round(abs(col("train_frac_cluster") - col("o_cluster")), 6)
-            .as("dev_cluster"))
-        .orderBy(col("source"))
-    }),
-
-    "q309_heavyhitter_merge" -> ((s, dir) => {
-      // mergeable frequent-items summaries — the O(k)-per-shard ANALYZE
-      // regime for an UNBOUNDED item domain (Agarwal et al., PODS 2012:
-      // merged top-k-with-threshold summaries keep a deterministic error
-      // bound), completing the two-regime synopsis story next to
-      // quantiles (q305 exact / q306 lossy): each shard keeps its k most
-      // frequent tokens (count desc, token asc — deterministic) plus
-      // err_s = the largest DROPPED count; a shard's true count for any
-      // item is exact if kept, else <= err_s, so the merged summary
-      // brackets every item's corpus count in [Σ kept, Σ kept-or-err]
-      // while shipping only k+1 numbers per shard. The audit reads the
-      // bracket for the exact global top-10 tokens, certifies
-      // containment, and prices the worst relative bracket width. The
-      // per-shard rank window partitions by shard — parallel across
-      // shards, and in the sharded-ANALYZE deployment each shard's
-      // (tok, c) histogram is machine-local by construction. The
-      // summarization body is the shared Stats.heavyHitterBracket, so
-      // the streaming maintenance face (FreqItemsStream) is
-      // bit-identical by construction.
-      GraftFunctions.register(s)
-      val toks = t(s, dir, "documents").select(
-        operators.Sharding.shardOf("doc_id", 4).as("shard"),
-        explode(operators.TextAnalysis.tokens(col("text"))).as("tok"))
-      val shardCounts =
-        toks.groupBy(col("shard"), col("tok")).agg(count(lit(1)).as("c"))
-      operators.Stats.heavyHitterBracket(shardCounts, kTop = 32)
-    }),
-
-    "q310_dedup_threshold_sweep" -> ((s, dir) => {
-      // dedup cutoff governance: the pair generation (banded join +
-      // exact verify — the expensive part) runs ONCE at the loosest
-      // candidate threshold, and every stricter cutoff is priced from
-      // the same pair stream: surviving pairs, documents touched, mean
-      // survivor similarity per θ. The readout a pipeline reads BEFORE
-      // committing to a Jaccard cutoff (q37 picks 0.5 by fiat; this
-      // query shows what 0.3–0.8 would each have done). Banding recall
-      // below the design threshold is part of the pinned semantics —
-      // the oracle replays the identical signature/band/verify pipeline.
-      GraftFunctions.register(s)
-      val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"),
-        "doc_id", "text", k = 16, bands = 4, shingleN = 3,
-        threshold = 0.3, fast = false)
-      Dedup.dedupThresholdSweep(pairs,
-        Seq(0.3, 0.4, 0.5, 0.6, 0.7, 0.8))
-    }),
-
-    "q311_data_recipe" -> ((s, dir) => {
-      // token-budget mixture plan (the "data recipe"): per source, the
-      // sampling rate / epoch count that hits a uniform target share of
-      // a 2M-token budget, and the share actually achievable once
-      // repeats cap at 4 epochs — the provisioning readout a
-      // pretraining run is configured from, surfacing WHERE the recipe
-      // falls short instead of silently over-repeating a small source.
-      // Exact integer algebra (integer div/ceil/min); one
-      // (source, Σtokens) exchange.
-      operators.Sampling.mixturePlan(
-        t(s, dir, "documents").select(col("source"),
-          size(TextAnalysis.tokens(col("text"))).as("toks")),
-        "source", col("toks"), budget = 2000000L, maxEpochs = 4)
-    }),
-
-    "q313_image_thumbnails" -> ((s, dir) => {
-      // REAL thumbnail pipeline, end to end: every document's PNG is
-      // decoded (javax.imageio), integer AREA-AVERAGED onto a 4x4 grid
-      // (the dHash box rule — deterministic, no float kernel),
-      // re-encoded as lossless PNG, and the RESIZED payload is decoded
-      // AGAIN by the shared feature pass — so the oracle's prediction
-      // (solid fixtures keep their exact colour under box averaging;
-      // dims become 4x4) certifies the whole decode→resize→encode→
-      // decode chain, not a metadata projection. Map-side only.
-      import s.implicits._
-      val media = Multimodal.imageMediaFromDocuments(
-        t(s, dir, "documents"))
-      Multimodal.extractFeatures(
-          Multimodal.resizeImages(media, targetW = 4, targetH = 4))
-        .select(col("doc_id"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"), col("mean_red"),
-          col("decoded"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q314_video_frame_sample" -> ((s, dir) => {
-      // frame sampling over REAL AVI payloads: every 2nd stream-order
-      // frame of each video document with its integer mean red — the
-      // "pick representative frames before the expensive per-frame
-      // model" step of a video curation pipeline. The RIFF walk and
-      // per-frame DIB reads are real; the fixture's frame colours are a
-      // doc_id formula, so the oracle predicts every sampled frame
-      // exactly. Map-side flatMap; nothing shuffles but the readout.
-      import s.implicits._
-      val media = Multimodal.mediaFromDocuments(t(s, dir, "documents"))
-      Multimodal.sampleVideoFrames(media, everyK = 2)
-        .select(col("doc_id"), col("frame_idx"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"), col("red_mean"))
-        .orderBy(col("doc_id"), col("frame_idx"))
-    }),
-
-    "q315_blocklist_scan" -> ((s, dir) => {
-      // C4-style banned-phrase scan: per (source, pattern), how many
-      // docs carry the pattern and its total occurrence count — ONE
-      // Aho-Corasick automaton walk per document for the WHOLE
-      // blocklist (functions.BlocklistHits, codegen'd native
-      // expression; a LIKE-per-pattern plan re-reads each doc once per
-      // pattern, a 20-entry blocklist = 20 corpus scans). The list
-      // includes absent phrases (zero rows must be exact, not dropped)
-      // and a nested pattern pair ("fast" inside "fast fast") that
-      // exercises the automaton's suffix-output links. Counting is
-      // greedy leftmost non-overlapping per pattern = the replace()-
-      // count every SQL engine replays.
-      GraftFunctions.register(s)
-      TextAnalysis.blocklistScan(t(s, dir, "documents"),
-        "source", "text", blocklistPatterns)
-    }),
-
-    "q316_encoding_audit" -> ((s, dir) => {
-      // CCNet/C4-class encoding-health gate: per source, docs carrying
-      // U+FFFD replacement chars, C0 control junk, or the
-      // UTF-8-as-Latin-1 mojibake digraph — and the clean rate. The
-      // corpus is synthetic-clean, so (the q55 PII pattern) the fixture
-      // INJECTS deterministic doc_id-keyed noise identically in both
-      // engines first; the audit itself (TextAnalysis.encodingAudit) is
-      // plain map-side predicates + one source-keyed aggregate.
-      val noisy = t(s, dir, "documents").select(col("source"),
-        concat(col("text"),
-          when(col("doc_id") % 5 === 0, lit(" caf\u00C3\u00A9"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 7 === 0, lit(" \uFFFD"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 11 === 0, lit("\u0007"))
-            .otherwise(lit(""))).as("text"))
-      TextAnalysis.encodingAudit(noisy, "source", "text")
-    }),
-
-    "q317_curriculum_plan" -> ((s, dir) => {
-      // staged "clean data first" curriculum: quality quartile tiers
-      // (the shared q31 quality score, quantized least(floor(q*4),3)),
-      // stage s trains on tiers >= 4-s with budget share s/10 - the
-      // provisioning readout a staged pretraining run is planned with,
-      // priced by the same integer mixture algebra as q311 (epoch cap,
-      // achievable share, zero-token branch for an empty top tier).
-      // ONE corpus rollup; the stage x tier range join is bounded
-      // nested-loop algebra (see Sampling.curriculumPlan).
-      val perDoc = t(s, dir, "documents").select(
-        least(floor(TextAnalysis.qualityScore(col("text")) * 4), lit(3))
-          .cast("int").as("tier"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("toks"))
-      operators.Sampling.curriculumPlan(perDoc, col("tier"),
-        col("toks"), budget = 2000000L, nTiers = 4, maxEpochs = 4)
-    }),
-
-    "q318_entropy_gate" -> ((s, dir) => {
-      // compressibility-proxy junk gate: per source, the DECIMAL-mean
-      // character entropy and how many docs fall below 3.5 bits/char
-      // (loops/repeated-character spam score near log2 of their tiny
-      // alphabet; natural text ~4.1-4.5). The corpus is clean, so the
-      // fixture REPLACES every 13th doc with degenerate repeat text
-      // identically in both engines; per-doc entropy is one
-      // native-expression pass (functions.CharEntropy, 9-decimal-
-      // pinned, order-independent), replayed by the oracle from a
-      // per-character GROUP BY.
-      GraftFunctions.register(s)
-      val noisy = t(s, dir, "documents").select(col("source"),
-        when(col("doc_id") % 13 === 0, lit("spam " * 40))
-          .otherwise(col("text")).as("text"))
-      TextAnalysis.entropyGate(noisy, "source", "text", lowBits = 3.5)
-    }),
-
-    "q319_seqlen_sweep" -> ((s, dir) => {
-      // max-sequence-length selection: the exact truncation-loss /
-      // padding-waste / utilization / packing-lower-bound curve over a
-      // candidate cap grid, all priced from ONE corpus pass (per-doc
-      // token counts cross the broadcast grid literal; partial agg
-      // collapses to |grid| rows before the single exchange). The
-      // decision readout a pretraining run uses to pick max_len.
-      TextAnalysis.seqLenSweep(t(s, dir, "documents"),
-        TextAnalysis.tokenCount(col("text")),
-        Seq(8L, 16L, 32L, 64L, 128L))
-    }),
-
-    "q320_translit_neardup" -> ((s, dir) => {
-      // cross-variant (transliteration-normalized) near-dup: the corpus
-      // is scrambled into three surface variants per residue class —
-      // accented (a/e/o -> diacritics), uppercased, re-punctuated
-      // (space -> ", ") — identically in both engines; normalization
-      // (lower + diacritic fold + punct squash + space collapse,
-      // TextAnalysis.normalizeForDedup) makes all three variants
-      // canonical again, so MinHash-LSH over the NORMALIZED text
-      // recovers exactly the clean-corpus pair set that raw shingling
-      // would miss across variant classes. Map-side normalization in
-      // front of the standard banded pipeline — the scale shape is
-      // q37's unchanged.
-      GraftFunctions.register(s)
-      val injected = t(s, dir, "documents").select(col("doc_id"),
-        when(col("doc_id") % 3 === 0,
-            translate(col("text"), "aeo", "áéö"))
-          .when(col("doc_id") % 3 === 1, upper(col("text")))
-          .otherwise(expr("replace(text, ' ', ', ')")).as("text"))
-      val norm = injected.select(col("doc_id"),
-        TextAnalysis.normalizeForDedup(col("text")).as("text"))
-      Dedup.minhashLshPairs(norm, "doc_id", "text",
-          k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = false)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-
-    "q321_span_scrub" -> ((s, dir) => {
-      // repeated n-gram SPAN REMOVAL (the rewrite q56's detector only
-      // reports): trigrams in >= 10 distinct docs are corpus
-      // boilerplate, and every covered token position is scrubbed. The
-      // fixture plants a banner on doc_id%7 docs and a footer on
-      // doc_id%9 docs (keys coprime with the source assignment so the
-      // injection spreads across groups) — the audit reports per-source
-      // tokens before/removed and the organic heavy trigrams fire too.
-      TextAnalysis.repeatedSpanScrub(
-        t(s, dir, "documents").select(col("doc_id"), col("source"),
-          concat(
-            when(col("doc_id") % 7 === 0,
-                lit("subscribe to our newsletter now for updates "))
-              .otherwise(lit("")),
-            coalesce(col("text"), lit("")),
-            when(col("doc_id") % 9 === 0,
-                lit(" all rights reserved worldwide"))
-              .otherwise(lit(""))).as("text")),
-        "source", "text", n = 3, minDocs = 10L)
-    }),
-
-    "q322_fertility_drift" -> ((s, dir) => {
-      // tokenizer-fertility drift monitor: per (lang, source),
-      // chars-per-token fertility vs the language-wide reference, with
-      // a 2% drift flag — the rollout readout that catches a source
-      // whose content mix (or encoding) shifted under a tokenizer. The
-      // same associative (toks, chars) partials feed the streaming face
-      // (streaming.FertilityStream), so batch and stream are
-      // bit-identical by construction.
-      TextAnalysis.fertilityBracket(
-        TextAnalysis.fertilityPartials(t(s, dir, "documents"), "text"))
-    }),
-
-    "q323_dict_blocklist" -> ((s, dir) => {
-      // DICTIONARY-scale blocklist (3375 phrase patterns = the full
-      // trigram grid over a 15-word vocabulary, ~18k automaton nodes):
-      // exercises BlocklistHits' sparse CSR representation — one
-      // automaton walk per doc whatever the dictionary size, memory
-      // O(trie edges) — where a LIKE-per-pattern plan would re-scan
-      // every document 3375 times. Only (source, pattern) rows with
-      // hits survive; zero-hit patterns are dropped in both engines.
-      GraftFunctions.register(s)
-      TextAnalysis.blocklistScan(t(s, dir, "documents"),
-        "source", "text", dictBlocklistPatterns, dropZeroHits = true)
-    }),
-
-    "q324_template_prefixes" -> ((s, dir) => {
-      // template/boilerplate prefix audit: top-3 duplicated 24-char
-      // lowercased prefixes per source with doc share — the "is this
-      // source serving templated pages" detector. The fixture plants a
-      // banner prefix on doc_id%7 docs (coprime with the source
-      // assignment); organic prefixes are singletons, so the banner
-      // dominates rank 1 wherever it lands and ties break on the
-      // prefix text for a total order.
-      TextAnalysis.templatePrefixes(
-        t(s, dir, "documents").select(col("source"),
-          concat(
-            when(col("doc_id") % 7 === 0,
-                lit("breaking news update now live "))
-              .otherwise(lit("")),
-            coalesce(col("text"), lit(""))).as("text")),
-        "source", "text", prefixLen = 24, topK = 3)
-    }),
-
-    "q325_content_funnel" -> ((s, dir) => {
-      // the CONTENT-gate cleaning funnel: q110's cascade report rebuilt
-      // from the native content gates (token count, the q316 encoding
-      // detectors, the q318 char-entropy expression, the q315 blocklist
-      // automaton as a boolean) — per-stage survivor/drop counts in ONE
-      // corpus scan, each gate a conditional-sum column of a single
-      // partial-combined aggregate. The fixture plants spam (%13
-      // replacement) and encoding noise (%7/%9/%11 suffixes — keys
-      // coprime with the source assignment) identically in both
-      // engines so every stage has real attrition.
-      GraftFunctions.register(s)
-      val base = when(col("doc_id") % 13 === 0, expr("repeat('spam ', 40)"))
-        .otherwise(coalesce(col("text"), lit("")))
-      val injected = t(s, dir, "documents").select(col("doc_id"),
-        concat(base,
-          when(col("doc_id") % 7 === 0, lit(" caf\u00C3\u00A9"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 9 === 0, lit("\u0007"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 11 === 0, lit(" \uFFFD"))
-            .otherwise(lit(""))).as("text"))
-      // the SAME detector predicates q316 runs (shared helpers \u2014 the
-      // funnel's encoding gate cannot drift from encodingAudit)
-      val repl = TextAnalysis.hasReplacementChar(col("text"))
-      val ctrl = TextAnalysis.hasControlJunk(col("text"))
-      val moji = TextAnalysis.hasMojibake(col("text"))
-      // zero greedy-count sum == no pattern occurs at all, so the
-      // automaton doubles as a multi-phrase boolean gate in one walk
-      val hitsum = aggregate(
-        call_function("blocklist_hits", lower(col("text")),
-          typedlit(funnelBlocklist)),
-        lit(0L), (a, x) => a + x)
-      operators.Sampling.filterFunnel(injected, Seq(
-        "min_tokens" -> (TextAnalysis.tokenCount(col("text")) >= 20),
-        "encoding_clean" -> (!repl && !ctrl && !moji),
-        "entropy" ->
-          (round(call_function("char_entropy", col("text")), 6) >= 3.0),
-        "blocklist_clean" -> (hitsum === 0L)))
-        .orderBy(col("stage_id"))
-    }),
-
-    "q326_temperature_mix" -> ((s, dir) => {
-      // sampling-temperature sweep over the source mixture: natural
-      // share, T-flattened sampled share, and the boost per source for
-      // T in {1, 1/2, 1/4} — the table a pretraining run picks its
-      // sampling temperature from. The grid is dyadic so p^T is a
-      // sqrt chain (IEEE-correctly-rounded in EVERY engine; pow's last
-      // ulp is libm-specific), and the per-T normalizer sums through
-      // DECIMAL(38,20) — cross-engine bit-exact with no pow anywhere.
-      // coalesce(text,'') matches the round's NULL-handling discipline
-      // (fertilityPartials/entropyGate/blocklistScan): without it the
-      // NULL-skip only holds under Spark 4's ANSI size(NULL)=NULL default
-      operators.Sampling.temperatureMixture(
-        t(s, dir, "documents"), "source",
-        TextAnalysis.tokenCount(coalesce(col("text"), lit(""))),
-        sqrtLevels = Seq(0, 1, 2))
-    }),
-
-    "q312_recipe_after_dedup" -> ((s, dir) => {
-      // pipeline composition: the q311 recipe RE-PLANNED on the
-      // deduplicated corpus — dedup shrinks sources unevenly (a
-      // boilerplate-heavy feed loses most of its mass), so the honest
-      // provisioning readout prices targets against KEPT tokens, with
-      // each source's raw mass and duplicate-token fraction attached.
-      // Composition of the q75 keep-best selection (LSH pairs -> CC ->
-      // quality argmax) and the q311 integer recipe; the kept-id semi
-      // join is UNHINTED (kept ids are SF-linear — one per cluster).
-      GraftFunctions.register(s)
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
-        bands = 4, shingleN = 3, threshold = 0.5, fast = true)
-      val kept = Dedup.keepBest(docs, pairs, "doc_id",
-          TextAnalysis.qualityScore(col("text")))
-        .select(col("kept_id").as("doc_id"))
-      val toks = docs.select(col("doc_id"), col("source"),
-        size(TextAnalysis.tokens(col("text"))).as("toks"))
-      val plan = operators.Sampling.mixturePlan(
-        toks.join(kept, Seq("doc_id"), "left_semi"),
-        "source", col("toks"), budget = 2000000L, maxEpochs = 4)
-      val raw = toks.groupBy(col("source"))
-        .agg(sum(col("toks").cast("long")).as("tokens_raw"))
-      plan.join(raw, Seq("source"))
-        .select(col("source"), col("n_docs"), col("tokens_avail"),
-          col("target_tokens"), col("sampling_rate"), col("epochs"),
-          col("capped_tokens"), col("achievable_share"),
-          col("tokens_raw"),
-          round(lit(1.0) - col("tokens_avail").cast("double")
-            / col("tokens_raw").cast("double"), 6).as("dup_token_frac"))
-        .orderBy(col("source"))
-    }),
-
-    "q301_dup_transitivity" -> ((s, dir) => {
-      // near-dup transitivity audit: triangle census of the minhash
-      // pair GRAPH itself (q37's edges through q145's degree-ordered
-      // triangle machinery) — the "are my duplicate pairs cliques or
-      // chains" gate that decides whether connected-components
-      // clustering (q54) is safe: a high clustering coefficient means
-      // components are tight duplicate groups; a low one means drift
-      // chains, where transitive closure over-merges and q75's
-      // keep-best needs a similarity re-check. Pair edges are already
-      // the bounded equi-join output; the census adds the oriented
-      // wedge join only.
-      GraftFunctions.register(s)
-      val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"),
-          "doc_id", "text", k = 16, bands = 4, shingleN = 3,
-          threshold = 0.5, fast = false)
-        .select(col("a_id").as("src"), col("b_id").as("dst"))
-      operators.Graph.triangleStats(pairs)
-    }),
-
-    "q302_bm25_sweep" -> ((s, dir) => {
-      // BM25 hyperparameter sweep as ONE query: 6 (k1, b) configs
-      // score the same 3-term query from a single postings pass (the
-      // config grid is a 6-row broadcast over the shared tf/df/stats
-      // tables — grid search never re-reads the corpus), and each
-      // config's top-10 is compared to the default (1.2, 0.75) by
-      // RBO@10 — the "how sensitive is my ranking to k1/b" tuning
-      // readout. The default's own row lands exactly at 1 − 0.9^10,
-      // the identical-ranking RBO — a built-in self-check.
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val terms = Seq("spark", "join", "window")
-      val toks = operators.TextAnalysis.tokens(col("text"))
-      val dl = operators.Materializer.Local(t(s, dir, "documents")
-        .select(col("doc_id"), size(toks).as("dl"),
-          explode_outer(filter(toks, t => t.isInCollection(terms)))
-            .as("t")))
-      val stats = dl.groupBy(col("doc_id"))
-        .agg(first(col("dl")).as("dl"))
-        .agg(count(lit(1)).cast("double").as("n_docs"),
-          (sum(col("dl")).cast("double") / count(lit(1)).cast("double"))
-            .as("avgdl"))
-      val tf = dl.filter(col("t").isNotNull)
-        .groupBy(col("doc_id"), col("dl"), col("t"))
-        .agg(count(lit(1)).cast("double").as("tf"))
-      val df = tf.groupBy(col("t"))
-        .agg(count(lit(1)).cast("double").as("df"))
-      val cfgs = Seq(0.6, 1.2, 2.0).flatMap(k1 =>
-        Seq(0.25, 0.75).map(b => (k1, b))).toDF("k1", "bb")
-      val idf = log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5))
-        / (col("df") + lit(0.5)))
-      val tfn = col("tf") * (col("k1") + lit(1.0)) /
-        (col("tf") + col("k1") * (lit(1.0) - col("bb")
-          + col("bb") * col("dl").cast("double") / col("avgdl")))
-      val wR = Window.partitionBy(col("k1"), col("bb"))
-        .orderBy(col("score").desc, col("doc_id").asc)
-      val ranked = operators.Materializer.Local(tf
-        .join(operators.Hints.boundedBroadcast(df, "query_term_set"), Seq("t"))
-        .crossJoin(broadcast(stats))
-        .crossJoin(broadcast(cfgs))
-        .select(col("k1"), col("bb"), col("doc_id"),
-          (idf * tfn).as("s"))
-        .groupBy(col("k1"), col("bb"), col("doc_id"))
-        .agg(round(sum(col("s").cast("decimal(38,6)")).cast("double"),
-          6).as("score"))
-        .withColumn("rk", row_number().over(wR).cast("int"))
-        .filter(col("rk") <= 10))
-      val base = ranked.filter(col("k1") === 1.2 && col("bb") === 0.75)
-        .select(col("doc_id"), col("rk").as("rb"))
-      val w = rboWeights.toDF("m", "c")
-      ranked
-        .join(operators.Hints.boundedBroadcast(base, "topk_capped"), Seq("doc_id"))
-        .select(col("k1"), col("bb"),
-          greatest(col("rk"), col("rb")).as("m"))
-        .join(broadcast(w), Seq("m"))
-        .groupBy(col("k1"), col("bb"))
-        .agg(count(lit(1)).cast("long").as("n_common"),
-          round(sum(col("c").cast("decimal(14,12)")).cast("double"), 6)
-            .as("rbo_vs_default"))
-        .orderBy(col("k1"), col("bb"))
-    }),
-
-    "q300_pipeline_funnel" -> ((s, dir) => {
-      // the full pretraining-data pipeline as ONE funnel: raw → cheap
-      // quality gates (q283's three) → exact dedup (q34's keep-min) →
-      // minhash near-dup drop (q37's pairs, larger id drops) →
-      // benchmark decontamination (q68's overlap, eval docs excluded)
-      // → language filter (q32's n-gram langid) → quality floor
-      // (q31's score ≥ 0.3) — per-stage doc/token survival, the
-      // pipeline-planning readout q283 gives for gate SUBSETS, here
-      // for the production stage ORDER. Stage flags are computed once
-      // per doc on the full corpus and survival is their cumulative
-      // AND: the funnel costs the union of its stages' plans plus one
-      // conditional aggregate — never seven passes.
-      val cum = funnelCum(s, dir)
-      val aggr = operators.Materializer.Local(cum.agg(
-        (1 to 7).flatMap(i => Seq(
-          sum(when(col(s"c$i"), 1L).otherwise(0L)).as(s"d$i"),
-          sum(when(col(s"c$i"), col("ntk")).otherwise(0L))
-            .as(s"t$i"))).head,
-        (1 to 7).flatMap(i => Seq(
-          sum(when(col(s"c$i"), 1L).otherwise(0L)).as(s"d$i"),
-          sum(when(col(s"c$i"), col("ntk")).otherwise(0L))
-            .as(s"t$i"))).tail: _*))
-      val names = Seq("raw", "gates", "exact_dedup", "near_dup",
-        "decontaminate", "lang_en", "quality")
-      names.zipWithIndex.map { case (nm, idx) =>
-        val i = idx + 1
-        aggr.select(lit(i.toLong).as("stage"), lit(nm).as("name"),
-          col(s"d$i").as("docs"), col(s"t$i").as("tokens"),
-          round(col(s"d$i").cast("double") / col("d1").cast("double"),
-            6).as("doc_share"))
-      }.reduce(_ unionAll _).orderBy(col("stage"))
-    }),
-
-    "q298_wavelet_synopsis" -> ((s, dir) => {
-      // Haar-wavelet synopsis (Matias, Vitter & Wang, SIGMOD 1998) of
-      // the same 32-point grid frequency sequence q297 buckets — the
-      // OTHER classic DB synopsis: 5 unrolled pairwise levels build
-      // the transform IN INTEGERS (detail D = left-sum − right-sum;
-      // true coefficient d = D/2^lvl), the top-8 details by |d| are
-      // kept (exact integer sort key |D|·2^(5−lvl)), and the dropped
-      // energy — the synopsis's reconstruction SSE,
-      // Σ D²·2^(5−lvl)/32 — stays exact until one final division.
-      // The corpus pays the family's single histogram exchange; the
-      // transform is bounded-table algebra.
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val (_, freqs) = orderGridFreqs(s, dir)
-      val dense = (1 to 32).toDF("t")
-        .join(freqs, Seq("t"), "left")
-        .select(col("t").cast("long").as("t"),
-          coalesce(col("f"), lit(0L)).as("x"))
-      var lvlTab = operators.Materializer.Local(dense)
-      var details: DataFrame = null
-      for (j <- 1 to 5) {
-        val agg = lvlTab
-          .groupBy(floor((col("t") + lit(1)) / lit(2)).cast("long")
-            .as("t"))
-          .agg(sum(col("x")).as("x"),
-            sum(when(pmod(col("t"), lit(2)) === 1, col("x"))
-              .otherwise(-col("x"))).as("d"))
-        val det = agg.select(lit(j).as("lvl"), col("t").as("pos"),
-          col("d").as("dd"), lit(1L << (5 - j)).as("w"),
-          lit(1L << j).as("den"))
-        details = if (details == null) det else details.unionAll(det)
-        lvlTab = operators.Materializer.Local(
-          agg.select(col("t"), col("x")))
-      }
-      val wSel = Window.orderBy((abs(col("dd")) * col("w")).desc,
-        col("lvl").asc, col("pos").asc)
-      val ranked = operators.Materializer.Local(
-        details.withColumn("rk", row_number().over(wSel).cast("long")))
-      val dc = lvlTab.select(lit(0L).as("rk"), lit(0).as("lvl"),
-        lit(1L).as("pos"),
-        round(col("x").cast("double") / lit(32.0), 6).as("coef"))
-      val kept = ranked.filter(col("rk") <= 8)
-        .select(col("rk"), col("lvl"), col("pos"),
-          round(col("dd").cast("double") / col("den").cast("double"), 6)
-            .as("coef"))
-      val sse = ranked.filter(col("rk") > 8)
-        .agg(coalesce(sum(col("dd") * col("dd") * col("w")), lit(0L))
-          .as("num"))
-        .select(round(col("num").cast("double") / lit(32.0), 6)
-          .as("dropped_sse"))
-      dc.unionAll(kept).crossJoin(broadcast(sse)).orderBy(col("rk"))
-    }),
-
-    "q299_hist_selectivity" -> ((s, dir) => {
-      // selectivity estimation from the q297 V-optimal histogram vs
-      // ground truth — the synopsis's actual consumer (Selinger et al.
-      // 1979 meets Jagadish et al. 1998): P(v > X) by continuous
-      // interpolation inside the bucket containing X, audited against
-      // the exact count at three mid-grid thresholds. The histogram is
-      // bounded and broadcasts; the only corpus-scale work is the
-      // exact-count aggregate the audit itself requires.
-      val (grid, freqs) = orderGridFreqs(s, dir)
-      val buckets = operators.Stats.vOptimalDp(freqs, g = 32, k = 4)
-      val gmin = t(s, dir, "orders")
-        .select((col("o_totalprice") * 100).cast("long").as("v"))
-        .agg(min(col("v")).as("gm"))
-      val bkt = buckets
-        .join(operators.Hints.boundedBroadcast(grid.select(col("t").as("seg_hi"),
-          col("gv").as("hi")), "grid_g_rows"), Seq("seg_hi"))
-        .join(operators.Hints.boundedBroadcast(grid.select((col("t") + 1).as("seg_lo"),
-          col("gv").as("glo")), "grid_g_rows"), Seq("seg_lo"), "left")
-        .crossJoin(broadcast(gmin))
-        .select(col("bucket"), col("n_rows"), col("hi"),
-          when(col("seg_lo") === 1, col("gm") - 1)
-            .otherwise(col("glo")).as("lo"))
-      import s.implicits._
-      val thr = grid.select(col("t"), col("gv"))
-        .join(Seq((8, 9), (16, 17), (24, 25)).toDF("ta", "tb"),
-          col("t") === col("ta") || col("t") === col("tb"))
-        .groupBy(col("ta"))
-        .agg(floor(sum(col("gv")).cast("double") / lit(2.0)).cast("long")
-          .as("x"))
-        .select(col("x"))
-      val raw = (col("hi") - col("x")).cast("double") /
-        (col("hi") - col("lo")).cast("double")
-      val fr = round(greatest(least(raw, lit(1.0)), lit(0.0)), 9)
-      val est = bkt.crossJoin(operators.Hints.boundedBroadcast(thr, "probe_points"))
-        .select(col("x"),
-          round(col("n_rows").cast("double") * fr, 6)
-            .cast("decimal(19,6)").as("contrib"))
-        .groupBy(col("x")).agg(sum(col("contrib")).as("est"))
-      val vals = t(s, dir, "orders")
-        .select((col("o_totalprice") * 100).cast("long").as("v"))
-      val act = vals.join(operators.Hints.boundedBroadcast(thr, "probe_points"),
-        col("v") > col("x"))
-        .groupBy(col("x")).agg(count(lit(1)).as("actual"))
-      est.join(operators.Hints.boundedBroadcast(act, "probe_points"), Seq("x"))
-        .select(col("x"),
-          round(col("est").cast("double"), 6).as("est"),
-          col("actual"),
-          round((col("est").cast("double") - col("actual").cast("double"))
-            / col("actual").cast("double"), 6).as("rel_err"))
-        .orderBy(col("x"))
-    }),
-
-    "q296_merkle_antientropy" -> ((s, dir) => {
-      // Merkle-tree anti-entropy (the Dynamo/Cassandra replica-repair
-      // primitive; Merkle 1987): two corpus snapshots — the original
-      // and a deterministically-edited replica (~1/8 of docs get a
-      // suffix edit, md5-gated) — hashed into a 3-level range tree
-      // (64 docs/leaf, fanout 16). The per-level diff counts ARE the
-      // sync bill: a synchronizer descends only into differing nodes,
-      // so rows(level k) bound the comparisons needed to locate every
-      // divergent range without shipping either corpus. Level hashes
-      // are md5 over the SORTED child-hash concatenation (order-free
-      // of partitioning); everything is exact string algebra — no
-      // float anywhere. One (bucket) exchange per level per snapshot,
-      // each 16x smaller than the last.
-      val d = t(s, dir, "documents")
-      val edited = d.select(col("doc_id"),
-        when(substring(md5(concat(lit("edit|"),
-            col("doc_id").cast("string"))), 1, 1) < lit("2"),
-          concat(col("text"), lit(" EDITED")))
-          .otherwise(col("text")).as("text"))
-      def rows(snap: DataFrame) = snap.select(col("doc_id"),
-        md5(concat(col("doc_id").cast("string"), lit("|"), col("text")))
-          .as("h"),
-        floor(col("doc_id") / lit(64)).cast("long").as("b"))
-      def level(prev: DataFrame): DataFrame = prev
-        .groupBy(floor(col("b") / lit(16)).cast("long").as("b"))
-        .agg(md5(array_join(array_sort(collect_list(col("h"))), ""))
-          .as("h"))
-      val ra = rows(d)
-      val rb = rows(edited)
-      def diff(a: DataFrame, bDf: DataFrame, key: String, lvl: Int) =
-        a.select(col(key).as("k"), col("h").as("ha"))
-          .join(bDf.select(col(key).as("k"), col("h").as("hb")),
-            Seq("k"))
-          .agg(count(lit(1)).as("n_nodes"),
-            sum(when(col("ha") =!= col("hb"), 1L).otherwise(0L))
-              .as("n_diff"))
-          .select(lit(lvl).as("level"), col("n_nodes"), col("n_diff"))
-      var la = ra.groupBy(col("b"))
-        .agg(md5(array_join(array_sort(collect_list(col("h"))), ""))
-          .as("h"))
-      var lb = rb.groupBy(col("b"))
-        .agg(md5(array_join(array_sort(collect_list(col("h"))), ""))
-          .as("h"))
-      var out = diff(ra, rb, "doc_id", 0)
-        .unionAll(diff(la, lb, "b", 1))
-      for (lvl <- 2 to 3) {
-        la = level(la); lb = level(lb)
-        out = out.unionAll(diff(la, lb, "b", lvl))
-      }
-      out.orderBy(col("level"))
-    }),
-
-    "q295_nn_graph_append" -> ((s, dir) => {
-      // incremental graph-ANN insert — the graph member of the
-      // incremental-index family (q65/q70 minhash, q128 IVF-PQ): the
-      // base corpus's NN-descent graph is a PERSISTED parquet artifact
-      // (built once, row-count sidecar guards staleness); the arriving
-      // batch (vec_id < 50) attaches via bucket mates + one hop through
-      // the stored edges, never touching old-vs-old pairs. Readout:
-      // exact-truth recall@5 of the inserted nodes' edges — 0.69 mean
-      // at sf0.01: one hop through the CONVERGED graph buys most of
-      // what the from-scratch build's 3 descent rounds reach (0.79)
-      // at a fraction of the work, vs ~0.32 for a bucket-only probe
-      // (q286's round-0 level).
-      GraftFunctions.register(s)
-      val emb = t(s, dir, "embeddings")
-      val base = emb.filter(col("vec_id") >= 50)
-      val fresh = emb.filter(col("vec_id") < 50)
-      val idxDir = s".bench/q295_graph_${corpusKey(dir)}"
-      val idxPath = ensurePersistedIndex(idxDir, base.count()) {
-        Similarity.nnDescentGraph(base, k = 10, rounds = 3)
-      }
-      val g = s.read.parquet(idxPath)
-      val ins = Similarity.nnGraphInsert(g, base, fresh, k = 10)
-      val truth = Similarity.bruteForceTopK(base, fresh, k = 5,
-          exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-      truth
-        .join(ins.select(col("v").as("query_id"),
-            col("u").as("neighbor_id"), lit(1L).as("hit")),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("long").as("found"))
-        .select(col("query_id"), col("found"),
-          round(col("found").cast("double") / lit(5.0), 6).as("recall"))
-        .orderBy(col("query_id"))
-    }),
-
-    "q294_dedup_agreement" -> ((s, dir) => {
-      // near-dup detector agreement: the three TEXT pair generators —
-      // minhash-LSH (q37, Jaccard≥0.5), banded SimHash (q58,
-      // hamming≤3), winnowing fingerprints (q224, ≥2 shared) — run on
-      // the same corpus and their pair sets Venn'd by bitmask. The
-      // "do my detectors see the same duplicates, and which family do
-      // I ship" meta-audit: set-similarity, bit-similarity and
-      // literal-run detectors genuinely disagree on borderline pairs,
-      // and this query prices that disagreement. Each generator keeps
-      // its own bounded equi-join plan; the Venn adds one (a, b)
-      // exchange over the unioned pair sets.
-      GraftFunctions.register(s)
-      val d = t(s, dir, "documents")
-      val mh = Dedup.minhashLshPairs(d, "doc_id", "text", k = 16,
-          bands = 4, shingleN = 3, threshold = 0.5, fast = false)
-        .select(col("a_id").as("a"), col("b_id").as("b"),
-          lit(1L).as("bit"))
-      val sh = Dedup.simhashNearDupPairs(d, "doc_id", "text",
-          maxHamming = 3)
-        .select(col("a_id").as("a"), col("b_id").as("b"),
-          lit(2L).as("bit"))
-      val fpd = operators.TextAnalysis.winnowingFingerprints(d,
-          "doc_id", "text", k = 4, w = 4)
-        .select(col("id"), col("h")).distinct()
-      val keep = fpd.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= 100)
-      val f2 = fpd.join(keep.select(col("h")), Seq("h"))
-      val wn = f2.select(col("h"), col("id").as("a"))
-        .join(f2.select(col("h"), col("id").as("b")), Seq("h"))
-        .filter(col("a") < col("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 2)
-        .select(col("a"), col("b"), lit(4L).as("bit"))
-      mh.unionAll(sh).unionAll(wn)
-        .groupBy(col("a"), col("b")).agg(sum(col("bit")).as("mask"))
-        .groupBy(col("mask")).agg(count(lit(1)).as("n_pairs"))
-        .select(col("mask").cast("long").as("mask"),
-          (col("mask").bitwiseAND(lit(1L)) > 0).as("in_minhash"),
-          (col("mask").bitwiseAND(lit(2L)) > 0).as("in_simhash"),
-          (col("mask").bitwiseAND(lit(4L)) > 0).as("in_winnowing"),
-          col("n_pairs").cast("long").as("n_pairs"))
-        .orderBy(col("mask"))
-    }),
-
-    "q289_facility_location" -> ((s, dir) => {
-      // facility-location greedy data selection (Lin & Bilmes 2011):
-      // 5 exemplar docs from a 30-doc hash-order candidate pool
-      // maximizing total best-representative Jaccard coverage — the
-      // submodular "small set that looks like the corpus" selection
-      // (1-1/e of optimal). The n×30 sparse sim matrix forms once via a
-      // broadcast shingle equi-join and checkpoints; each greedy round
-      // is ONE marginal-gain aggregate + a 1-row broadcast coverage
-      // update, exact DECIMAL end to end.
-      GraftFunctions.register(s)
-      operators.Sampling.facilityLocationSelect(t(s, dir, "documents"),
-          "doc_id", "text", nCand = 30, k = 5, shingleN = 3)
-        .orderBy(col("rk"))
-    })
-  )
-
-  /** Truncated rank-biased-overlap contribution table (Webber et al.
-    * 2010), p = 0.9, depth 10: c(m) = (1-p)·Σ_{d=m..10} p^(d-1)/d is
-    * what ONE shared doc first covered at depth m adds to RBO@10. Exact
-    * decimal strings (12 places, HALF_UP at the division only — p^(d-1)
-    * is exact), shared VERBATIM with the q290 oracle's VALUES table. */
-  private[graft] lazy val rboWeights: Seq[(Int, String)] = {
-    val p = BigDecimal("0.9")
-    (1 to 10).map { m =>
-      val tail = (m to 10).map { d =>
-        (p.pow(d - 1) / BigDecimal(d))
-          .setScale(14, BigDecimal.RoundingMode.HALF_UP)
-      }.sum
-      m -> ((BigDecimal(1) - p) * tail)
-        .setScale(12, BigDecimal.RoundingMode.HALF_UP).toString
-    }
-  }
-
-  /** Exact Shapley coalition enumeration for 4 players shared VERBATIM
-    * with the q264 oracle's VALUES table: (player g, coalition without
-    * g as bitmask, coalition with g, weight |S|!(3−|S|)!/4!). */
-  private lazy val shapleyCoalitions: Seq[(Int, Int, Int, Double)] = {
-    def fact(x: Int): Long = (1 to x).foldLeft(1L)(_ * _)
-    for {
-      g <- 0 until 4
-      s <- 0 until 16
-      if (s & (1 << g)) == 0
-    } yield {
-      val size = Integer.bitCount(s)
-      (g, s, s | (1 << g),
-        fact(size) * fact(3 - size) / 24.0)
-    }
-  }
-
-  /** Test-only accessor for the q264 coalition enumeration. */
-  private[graft] def shapleyCoalitionsForTest = shapleyCoalitions
-
-  /** JL ±1 sign matrix (Achlioptas 2003) shared VERBATIM between the
-    * q250 Spark projection and its oracle's VALUES table: sign(k)(j)
-    * for target dim k < 16, source dim j < 64, + iff the first hex
-    * char of md5("jl|k|j") is below '8'. */
-  private lazy val jlSigns: Array[Array[Double]] =
-    Array.tabulate(16, 64) { (k, j) =>
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"jl|$k|$j".getBytes("UTF-8"))
-      if ((h(0) & 0x80) == 0) 1.0 else -1.0
-    }
-
-  // ------------------------------------------------------------- oracle SQL
-
-  /** DuckDB token-list fragment matching TextAnalysis.tokens. */
-  private val toksSql =
-    "list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')"
-
-  /** DuckDB decimal-exact cosine fragments matching Similarity.cosineExact
-    * (validated by q40). `dotSql(a,b)` etc. are column expressions. */
-  private def dotSql(a: String, b: String) =
-    s"""list_sum(list_transform(list_zip($a, $b),
-       |      z -> CAST(CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)
-       |        AS DECIMAL(38,20))))""".stripMargin
-  private def normSql(a: String) =
-    s"""list_sum(list_transform($a,
-       |      x -> CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-       |        AS DECIMAL(38,20))))""".stripMargin
-  private val cosSql =
-    """CASE WHEN nq = 0 OR nc = 0 THEN 0.0
-      |      ELSE CAST(dot AS DOUBLE)
-      |        / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(nc AS DOUBLE)))
-      |      END""".stripMargin
-
-  /** DuckDB hyperplane-LSH bucket CTEs matching
-    * functions.HyperplaneLsh (md5-derived components, sign-bit bucket).
-    * Emits CTE definitions `comp`, `elems`, `dots`, `buckets`. */
-  private def bucketCtes(planes: Int) =
-    s"""comp AS (
-       |  SELECT p.range AS p, j.range AS j,
-       |    list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-       |      (strpos('0123456789abcdef',
-       |        substr(md5('plane|' || p.range || '|' || j.range),
-       |          i + 1, 1)) - 1)
-       |      for i in range(0, 8)]) / 4294967296.0 * 2.0 - 1.0 AS c
-       |  FROM range(0, $planes) p, range(0, 64) j
-       |), elems AS (
-       |  SELECT vec_id, unnest(embedding) AS v,
-       |    generate_subscripts(embedding, 1) - 1 AS j
-       |  FROM embeddings
-       |), dots0 AS (
-       |  SELECT e.vec_id, c.p, SUM(CAST(e.v AS DOUBLE) * c.c) AS dot
-       |  FROM elems e JOIN comp c ON c.j = e.j GROUP BY 1, 2
-       |), buckets AS (
-       |  SELECT vec_id, CAST(SUM(CASE WHEN dot >= 0
-       |    THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM dots0 GROUP BY 1
-       |)""".stripMargin
-
-  private val stopwordsSql = TextAnalysis.langProfiles.flatMap(_._2)
-    .distinct.sorted.map(w => s"'$w'").mkString("[", ", ", "]")
-
-  /** Unrolled full-batch-GD CTE chain for q91 (w0..w{iters}): each step
-    * is one decimal-accumulated gradient aggregate replaying
-    * QualityClassifier.trainLogReg's arithmetic op-for-op, so the oracle
-    * RE-TRAINS the classifier and must land on identical weights. */
-  private def q91Ctes(iters: Int, eta: Double): String = {
-    val enSql = TextAnalysis.langProfiles.toMap.apply("en")
-      .map(w => s"'$w'").mkString("[", ", ", "]")
-    val feats =
-      s"""f0 AS (
-         |  SELECT doc_id,
-         |    1.0 AS x0,
-         |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS x1,
-         |    CASE WHEN length(text) = 0 THEN 0.0
-         |      ELSE CAST(length(regexp_replace(text,
-         |          '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-         |        / CAST(length(text) AS DOUBLE) END AS x2,
-         |    CASE WHEN len(tk) = 0 THEN 0.0
-         |      ELSE CAST(len(list_filter(tk,
-         |          t -> list_contains($stopwordsSql, lower(t)))) AS DOUBLE)
-         |        / CAST(len(tk) AS DOUBLE) END AS x3,
-         |    CASE WHEN len(tk) = 0 THEN 0.0
-         |      ELSE CAST(len(list_filter(tk,
-         |          t -> list_contains($enSql, lower(t)))) AS DOUBLE)
-         |        / CAST(len(tk) AS DOUBLE) END AS x4
-         |  FROM (SELECT doc_id, text, $toksSql AS tk FROM documents)
-         |), feats AS MATERIALIZED (
-         |  SELECT *, CASE WHEN round(x1 * (1.0 - x2) * (0.5 + x3 / 2.0),
-         |    6) >= 0.3 THEN 1.0 ELSE 0.0 END AS y
-         |  FROM f0
-         |), nr AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM feats),
-         |w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3,
-         |  0.0 AS w4)""".stripMargin
-    // one CTE per GD step, referencing the previous level exactly ONCE
-    // (a separate gradient CTE would reference w{i-1} twice and DuckDB
-    // inlines multiply-referenced CTEs — exponential planning by level);
-    // GROUP BY the single weight row lets the update mix the gradient
-    // aggregates with the carried weights, and MATERIALIZED pins each
-    // level to one evaluation
-    val steps = (1 to iters).map { i =>
-      val dotW = (0 to 4).map(j => s"w.w$j * f.x$j").mkString(" + ")
-      val ws = (0 to 4).map(j =>
-        s"""w.w$j - $eta * (CAST(SUM(CAST(f.x$j
-           |      * (1.0 / (1.0 + exp(-($dotW))) - f.y)
-           |      AS DECIMAL(38,6))) AS DOUBLE) / MAX(nr.n)) AS w$j"""
-          .stripMargin).mkString(",\n    ")
-      s"""w$i AS MATERIALIZED (
-         |  SELECT $ws
-         |  FROM feats f CROSS JOIN w${i - 1} w CROSS JOIN nr
-         |  GROUP BY w.w0, w.w1, w.w2, w.w3, w.w4)""".stripMargin
-    }.mkString(",\n")
-    feats + ",\n" + steps
-  }
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS DECIMAL(38,6))) AS DOUBLE) AS sum_charge,
-        |  COUNT(*) AS count_order,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS avg_qty
-        |FROM lineitem
-        |WHERE l_shipdate < TIMESTAMP '1999-01-01'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_top_customers" ->
-      """SELECT c_custkey, c_name,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_orders
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_custkey, c_name
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 10""".stripMargin,
-
-    "q03_shipping_priority" ->
-      """SELECT o_orderkey, o_orderdate,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue DESC, o_orderkey
-        |LIMIT 20""".stripMargin,
-
-    "q05_region_revenue" ->
-      """SELECT r_name, n_name,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "q04_order_priority" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_orders
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q06_forecast_revenue" ->
-      """SELECT
-        |  CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n
-        |FROM lineitem
-        |WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q10_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q11_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |  AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q12_window_topn" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |  FROM orders) sub
-        |WHERE rk <= 3
-        |ORDER BY o_custkey, rk""".stripMargin,
-
-    "q13_running_sum" ->
-      """SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) OVER (
-        |    PARTITION BY l_suppkey
-        |    ORDER BY l_shipdate, l_orderkey, l_linenumber
-        |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running_rev
-        |FROM lineitem
-        |ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber""".stripMargin,
-
-    "q14_distinct_agg" ->
-      """SELECT l_suppkey, COUNT(DISTINCT l_partkey) AS n_parts,
-        |  COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin,
-
-    "q15_set_except" ->
-      """SELECT nationkey FROM (
-        |  SELECT DISTINCT c_nationkey AS nationkey FROM customer
-        |  EXCEPT
-        |  SELECT DISTINCT s_nationkey AS nationkey FROM supplier
-        |  WHERE s_acctbal < 0) sub
-        |ORDER BY nationkey""".stripMargin,
-
-    "q16_rollup" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS qty
-        |FROM lineitem
-        |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-    "q18_cube" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS qty
-        |FROM lineitem
-        |GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-    "q19_approx_distinct" ->
-      """SELECT l_returnflag,
-        |  COUNT(DISTINCT l_partkey) AS exact_parts,
-        |  COUNT(DISTINCT l_orderkey) AS exact_orders,
-        |  TRUE AS parts_within_tol,
-        |  TRUE AS orders_within_tol
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q26_evt_props_agg" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_bucket,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q27_evt_minmax_by" ->
-      """SELECT user_id, max_by(event_id, ts) AS last_event_id,
-        |  min_by(event_id, ts) AS first_event_id, COUNT(*) AS n
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q28_evt_moving_avg" ->
-      """SELECT user_id, ts, event_id,
-        |  CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER w AS DOUBLE)
-        |    / COUNT(*) OVER w AS moving_avg
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts, event_id""".stripMargin,
-
-    "q45_emb_centroid" ->
-      """SELECT label, CAST(pos AS BIGINT) AS pos,
-        |  round(CAST(SUM(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,20))) AS DOUBLE)
-        |    / COUNT(*), 9) AS mean_val,
-        |  COUNT(*) AS n_vecs
-        |FROM (SELECT label, unnest(embedding) AS v,
-        |        generate_subscripts(embedding, 1) AS pos
-        |      FROM embeddings) u
-        |GROUP BY label, pos ORDER BY label, pos""".stripMargin,
-
-    "q17_highwater" ->
-      """SELECT max(o_orderdate) AS max_orderdate,
-        |  min(o_orderdate) AS min_orderdate, COUNT(*) AS n
-        |FROM orders""".stripMargin,
-
-    "q20_evt_hourly" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q21_evt_json" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q22_evt_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
-        |         WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), numbered AS (
-        |  SELECT user_id, ts, value,
-        |    CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM flagged)
-        |SELECT user_id, session_seq,
-        |  min(ts) AS session_start, max(ts) AS session_end,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-        |FROM numbered GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
-
-    "q23_evt_highwater" ->
-      "SELECT max(ts) AS high_water, COUNT(*) AS n FROM events",
-
-    "q24_evt_gofmt" ->
-      """SELECT event_id,
-        |  regexp_replace(regexp_replace(
-        |    strftime(ts, '%Y-%m-%dT%H:%M:%S.%fZ'),
-        |    '(\.\d*?)0+Z$', '\1Z'), '\.Z$', 'Z') AS event_start_str
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q25_evt_export" ->
-      """SELECT CAST(event_id AS VARCHAR) AS IndvId,
-        |  CAST(user_id AS VARCHAR) AS UserId,
-        |  regexp_replace(regexp_replace(
-        |    strftime(ts, '%Y-%m-%dT%H:%M:%S.%fZ'),
-        |    '(\.\d*?)0+Z$', '\1Z'), '\.Z$', 'Z') AS EventStart,
-        |  event_type AS EventType,
-        |  '{"evt_value_real":"' || CAST(value AS VARCHAR)
-        |    || '","evt_props_str":"'
-        |    || replace(replace(props, '\', '\\'), '"', '\"')
-        |    || '"}' AS CustomVars
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q30_doc_tokens" ->
-      s"""SELECT doc_id, len($toksSql) AS n_tokens,
-         |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]', 0))
-         |    AS n_bpe_tokens,
-         |  length(text) AS n_chars_actual
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q31_doc_quality" -> docQualitySql,
-
-    "q32_doc_langid" -> langIdSql,
-
-    "q33_doc_fingerprint" ->
-      s"""SELECT doc_id,
-         |  list_reduce(
-         |    list_prepend(CAST(0 AS BIGINT),
-         |      list_transform($toksSql,
-         |        t -> CAST(length(t) AS BIGINT) * 31
-         |          + CAST(ascii(t) AS BIGINT) * 7
-         |          + CAST(ascii(reverse(t)) AS BIGINT))),
-         |    (a, b) -> (a * 131 + b) % 1000000007) AS fp
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q34_dedup_exact" ->
-      """SELECT md5(k) AS text_hash, min(doc_id) AS keep_id,
-        |  COUNT(*) AS n_copies
-        |FROM (SELECT doc_id, substr(text, 1, 64) AS k FROM documents) s
-        |GROUP BY k HAVING COUNT(*) > 1
-        |ORDER BY keep_id""".stripMargin,
-
-    "q35_dedup_drop" ->
-      "SELECT COUNT(*) AS n_unique FROM (SELECT DISTINCT text FROM documents) s",
-
-    "q36_jaccard_pairs" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> x <> '')) AS toks,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id, toks,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS tri
-        |  FROM tk)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  round(CASE WHEN len(list_distinct(list_concat(a.toks, b.toks))) = 0
-        |    THEN 0.0
-        |    ELSE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE)
-        |    END, 6) AS sim,
-        |  round(CASE WHEN len(list_distinct(list_concat(a.tri, b.tri))) = 0
-        |    THEN 0.0
-        |    ELSE CAST(len(list_intersect(a.tri, b.tri)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.tri, b.tri))) AS DOUBLE)
-        |    END, 6) AS sim3
-        |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-        |ORDER BY a_id""".stripMargin,
-
-    "q37_dedup_minhash_lsh" -> minhashPairsSql,
-
-    "q68_decontaminate" -> deconSql,
-
-    "q72_ann_pq" ->
-      """SELECT vec_id AS query_id, CAST(10 AS BIGINT) AS n_results,
-        |  TRUE AS recall_floor_ok
-        |FROM embeddings WHERE vec_id < 30 ORDER BY query_id""".stripMargin,
-
-    "q74_doc_stratified" ->
-      """SELECT lang, doc_id, CAST(rk AS INT) AS rk FROM (
-        |  SELECT lang, doc_id, row_number() OVER (PARTITION BY lang
-        |    ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id)
-        |    AS rk
-        |  FROM documents)
-        |WHERE rk <= 20 ORDER BY lang, rk""".stripMargin,
-
-    "q77_ann_ivfpq" ->
-      """SELECT vec_id AS query_id, CAST(10 AS BIGINT) AS n_results,
-        |  TRUE AS recall_floor_ok
-        |FROM embeddings WHERE vec_id < 30 ORDER BY query_id""".stripMargin,
-
-    "q78_corpus_card" -> corpusCardSql,
-
-    // the INCREMENTAL card must land on the direct computation exactly
-    // (decimal partials and per-(source,lang) counts merge losslessly),
-    // so the oracle IS q78's direct-path SQL
-    "q210_card_incremental" -> corpusCardSql,
-
-    "q76_doc_surprisal" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> x <> '')) AS term
-        |  FROM documents
-        |), terms AS (
-        |  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        |  FROM toks GROUP BY doc_id, term
-        |), freq AS (
-        |  SELECT term, CAST(SUM(tf) AS BIGINT) AS cnt FROM terms
-        |  GROUP BY term
-        |), n AS (SELECT CAST(SUM(tf) AS DOUBLE) AS nt FROM terms)
-        |SELECT t.doc_id, CAST(SUM(t.tf) AS BIGINT) AS n_tokens,
-        |  round(CAST(SUM(CAST(CAST(t.tf AS DOUBLE) * ln(nt / CAST(f.cnt
-        |      AS DOUBLE)) AS DECIMAL(38,6))) AS DOUBLE)
-        |    / CAST(SUM(t.tf) AS DOUBLE), 6) AS surprisal
-        |FROM terms t JOIN freq f USING (term), n
-        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-
-    "q71_boilerplate" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id, list_distinct(CASE WHEN len(raw) < 3
-        |    THEN [array_to_string(raw, ' ')]
-        |    ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |          for i in range(0, len(raw) - 2)] END) AS shingles
-        |  FROM tk
-        |), ex AS (
-        |  SELECT doc_id, unnest(shingles) AS sh FROM sh
-        |), freq AS (
-        |  SELECT sh FROM ex GROUP BY sh HAVING COUNT(*) >= 5
-        |)
-        |SELECT e.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
-        |  CAST(COUNT(f.sh) AS BIGINT) AS n_frequent,
-        |  round(CAST(COUNT(f.sh) AS DOUBLE) / COUNT(*), 6) AS bp_frac
-        |FROM ex e LEFT JOIN freq f USING (sh)
-        |GROUP BY e.doc_id ORDER BY e.doc_id""".stripMargin,
-
-    "q79_span_dedup" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM documents
-        |), occ AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |    array_to_string(raw[i+1:i+6], ' ') AS sh,
-        |    CAST(len(raw) AS BIGINT) AS n_toks
-        |  FROM tk, unnest(range(0, greatest(len(raw) - 5, 1))) AS t(i)
-        |), freq AS (
-        |  SELECT sh FROM occ GROUP BY sh HAVING COUNT(*) >= 2
-        |), flg AS (
-        |  SELECT o.doc_id, o.pos, o.sh, o.n_toks
-        |  FROM occ o JOIN freq USING (sh)
-        |), kdoc AS (
-        |  SELECT sh, MIN(doc_id) AS k_doc FROM flg GROUP BY sh
-        |), kpos AS (
-        |  SELECT f.sh, k.k_doc, MIN(f.pos) AS k_pos
-        |  FROM flg f JOIN kdoc k USING (sh)
-        |  WHERE f.doc_id = k.k_doc GROUP BY f.sh, k.k_doc
-        |), cut AS (
-        |  SELECT DISTINCT f.doc_id, f.pos, f.n_toks
-        |  FROM flg f JOIN kpos k USING (sh)
-        |  WHERE NOT (f.doc_id = k.k_doc AND f.pos = k.k_pos)
-        |), iv AS (
-        |  SELECT doc_id, pos, LEAST(pos + 5, n_toks - 1) AS iend FROM cut
-        |), sp2 AS (
-        |  SELECT doc_id, pos, iend,
-        |    SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-        |  FROM (
-        |    SELECT doc_id, pos, iend,
-        |      CASE WHEN prev_end IS NULL OR pos > prev_end + 1
-        |        THEN 1 ELSE 0 END AS brk
-        |    FROM (
-        |      SELECT doc_id, pos, iend,
-        |        MAX(iend) OVER (PARTITION BY doc_id ORDER BY pos
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |          AS prev_end
-        |      FROM iv))
-        |), spans AS (
-        |  SELECT doc_id, grp, MIN(pos) AS s, MAX(iend) AS e
-        |  FROM sp2 GROUP BY doc_id, grp
-        |), perdoc AS (
-        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_cut_spans,
-        |    CAST(SUM(e - s + 1) AS BIGINT) AS n_tokens_cut,
-        |    string_agg(CAST(s AS VARCHAR) || ':' || CAST(e AS VARCHAR),
-        |      ',' ORDER BY s) AS spans_str
-        |  FROM spans GROUP BY doc_id
-        |), toksql AS (
-        |  SELECT tk.doc_id, CAST(i - 1 AS BIGINT) AS tpos, raw[i] AS tok
-        |  FROM tk, unnest(range(1, len(raw) + 1)) AS t(i)
-        |  WHERE tk.doc_id IN (SELECT doc_id FROM perdoc)
-        |), kept AS (
-        |  SELECT t.doc_id, t.tpos, t.tok
-        |  FROM toksql t LEFT JOIN spans s
-        |    ON t.doc_id = s.doc_id AND t.tpos BETWEEN s.s AND s.e
-        |  WHERE s.doc_id IS NULL
-        |), clean AS (
-        |  SELECT doc_id,
-        |    array_to_string(list(tok ORDER BY tpos), ' ') AS clean_text
-        |  FROM kept GROUP BY doc_id
-        |)
-        |SELECT p.doc_id, p.n_cut_spans, p.n_tokens_cut, p.spans_str,
-        |  COALESCE(c.clean_text, '') AS clean_text
-        |FROM perdoc p LEFT JOIN clean c USING (doc_id)
-        |ORDER BY p.doc_id""".stripMargin,
-
-    "q80_bpe_tokens" ->
-      s"""WITH tk AS (
-         |  SELECT doc_id,
-         |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
-         |      AS raw
-         |  FROM documents
-         |), w AS (
-         |  SELECT doc_id, unnest(raw) AS word FROM tk
-         |), cnt AS (
-         |  SELECT doc_id,
-         |    CAST(SUM(${graft.operators.Bpe.replaySqlTokenCount("word",
-                  graft.operators.Bpe.FixtureMerges)}) AS BIGINT) AS n_bpe
-         |  FROM w GROUP BY doc_id
-         |)
-         |SELECT tk.doc_id, CAST(len(tk.raw) AS BIGINT) AS n_words,
-         |  COALESCE(cnt.n_bpe, 0) AS n_bpe_tokens
-         |FROM tk LEFT JOIN cnt USING (doc_id)
-         |ORDER BY tk.doc_id""".stripMargin,
-
-    "q81_image_neardup" ->
-      """WITH m AS (
-        |  SELECT greatest(COUNT(*) // 20, 1) AS ng FROM documents
-        |), ids AS (
-        |  SELECT doc_id FROM documents WHERE doc_id % 100 <> 99
-        |), bits AS (
-        |  SELECT doc_id, CAST(j AS BIGINT) AS j,
-        |    CAST((
-        |      ((doc_id % ng) % (53 + j)) % 2
-        |      + CASE WHEN ((doc_id // ng) % 3) >= 1
-        |          AND j = (doc_id * 13) % 64 THEN 1 ELSE 0 END
-        |      + CASE WHEN ((doc_id // ng) % 3) = 2
-        |          AND j = (doc_id * 29 + 7) % 64 THEN 1 ELSE 0 END
-        |    ) % 2 AS BIGINT) AS bit
-        |  FROM ids, m, unnest(range(0, 64)) AS t(j)
-        |), blocks AS (
-        |  SELECT doc_id, j // 16 AS b, SUM(bit << (15 - (j % 16))) AS v
-        |  FROM bits GROUP BY doc_id, j // 16
-        |), cand AS (
-        |  SELECT DISTINCT l.doc_id AS a_id, r.doc_id AS b_id
-        |  FROM blocks l JOIN blocks r
-        |    ON l.b = r.b AND l.v = r.v AND l.doc_id < r.doc_id
-        |), ham AS (
-        |  SELECT c.a_id, c.b_id,
-        |    CAST(SUM(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS hamming
-        |  FROM cand c
-        |  JOIN bits ba ON ba.doc_id = c.a_id
-        |  JOIN bits bb ON bb.doc_id = c.b_id AND bb.j = ba.j
-        |  GROUP BY c.a_id, c.b_id
-        |)
-        |SELECT a_id, b_id, hamming FROM ham WHERE hamming <= 3
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q82_image_neardup_incr" ->
-      """WITH m AS (
-        |  SELECT greatest(COUNT(*) // 20, 1) AS ng FROM documents
-        |), ids AS (
-        |  SELECT doc_id FROM documents WHERE doc_id % 100 <> 99
-        |), bits AS (
-        |  SELECT doc_id, CAST(j AS BIGINT) AS j,
-        |    CAST((
-        |      ((doc_id % ng) % (53 + j)) % 2
-        |      + CASE WHEN ((doc_id // ng) % 3) >= 1
-        |          AND j = (doc_id * 13) % 64 THEN 1 ELSE 0 END
-        |      + CASE WHEN ((doc_id // ng) % 3) = 2
-        |          AND j = (doc_id * 29 + 7) % 64 THEN 1 ELSE 0 END
-        |    ) % 2 AS BIGINT) AS bit
-        |  FROM ids, m, unnest(range(0, 64)) AS t(j)
-        |), blocks AS (
-        |  SELECT doc_id, j // 16 AS b, SUM(bit << (15 - (j % 16))) AS v
-        |  FROM bits GROUP BY doc_id, j // 16
-        |), cand AS (
-        |  SELECT DISTINCT l.doc_id AS a_id, r.doc_id AS b_id
-        |  FROM blocks l JOIN blocks r
-        |    ON l.b = r.b AND l.v = r.v AND l.doc_id < r.doc_id
-        |  WHERE l.doc_id % 2 = 1 OR r.doc_id % 2 = 1
-        |), ham AS (
-        |  SELECT c.a_id, c.b_id,
-        |    CAST(SUM(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS hamming
-        |  FROM cand c
-        |  JOIN bits ba ON ba.doc_id = c.a_id
-        |  JOIN bits bb ON bb.doc_id = c.b_id AND bb.j = ba.j
-        |  GROUP BY c.a_id, c.b_id
-        |)
-        |SELECT a_id, b_id, hamming FROM ham WHERE hamming <= 3
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q83_bpe_trained" ->
-      """SELECT doc_id,
-        |  CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |    x -> x <> '')) AS BIGINT) AS n_words,
-        |  TRUE AS bpe_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q84_image_clusters" ->
-      """WITH RECURSIVE m AS (
-        |  SELECT greatest(COUNT(*) // 20, 1) AS ng FROM documents
-        |), ids AS (
-        |  SELECT doc_id FROM documents WHERE doc_id % 100 <> 99
-        |), bits AS (
-        |  SELECT doc_id, CAST(j AS BIGINT) AS j,
-        |    CAST((
-        |      ((doc_id % ng) % (53 + j)) % 2
-        |      + CASE WHEN ((doc_id // ng) % 3) >= 1
-        |          AND j = (doc_id * 13) % 64 THEN 1 ELSE 0 END
-        |      + CASE WHEN ((doc_id // ng) % 3) = 2
-        |          AND j = (doc_id * 29 + 7) % 64 THEN 1 ELSE 0 END
-        |    ) % 2 AS BIGINT) AS bit
-        |  FROM ids, m, unnest(range(0, 64)) AS t(j)
-        |), blocks AS (
-        |  SELECT doc_id, j // 16 AS b, SUM(bit << (15 - (j % 16))) AS v
-        |  FROM bits GROUP BY doc_id, j // 16
-        |), cand AS (
-        |  SELECT DISTINCT l.doc_id AS a_id, r.doc_id AS b_id
-        |  FROM blocks l JOIN blocks r
-        |    ON l.b = r.b AND l.v = r.v AND l.doc_id < r.doc_id
-        |), pairs AS (
-        |  SELECT c.a_id, c.b_id
-        |  FROM cand c
-        |  JOIN bits ba ON ba.doc_id = c.a_id
-        |  JOIN bits bb ON bb.doc_id = c.b_id AND bb.j = ba.j
-        |  GROUP BY c.a_id, c.b_id
-        |  HAVING SUM(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END) <= 3
-        |), edges AS (
-        |  SELECT a_id AS s, b_id AS d FROM pairs
-        |  UNION SELECT b_id, a_id FROM pairs
-        |), reach(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION
-        |  SELECT r.s, e.d FROM reach r JOIN edges e ON e.s = r.d
-        |)
-        |SELECT s AS doc_id, least(s, min(d)) AS cluster_id
-        |FROM reach GROUP BY s ORDER BY doc_id""".stripMargin,
-
-    "q85_semdedup" ->
-      s"""WITH ${bucketCtes(6)},
-         |l AS (
-         |  SELECT e.vec_id AS a_id, e.embedding AS av, b.bucket
-         |  FROM embeddings e JOIN buckets b USING (vec_id)
-         |), r AS (
-         |  SELECT e.vec_id AS b_id, e.embedding AS bv, b.bucket
-         |  FROM embeddings e JOIN buckets b USING (vec_id)
-         |), p AS (
-         |  SELECT a_id, b_id,
-         |    ${dotSql("av", "bv")} AS dot,
-         |    ${normSql("av")} AS nq,
-         |    ${normSql("bv")} AS nc
-         |  FROM l JOIN r USING (bucket) WHERE a_id < b_id
-         |), scored AS (
-         |  SELECT DISTINCT a_id, b_id, round($cosSql, 6) AS sim FROM p)
-         |SELECT b_id AS vec_id, MIN(a_id) AS dup_of,
-         |  CAST(COUNT(*) AS BIGINT) AS n_earlier
-         |FROM scored WHERE sim >= 0.4
-         |GROUP BY b_id ORDER BY vec_id""".stripMargin,
-
-    "q86_doc_chunk" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, $toksSql AS tk FROM documents
-         |), st AS (
-         |  SELECT doc_id, tk, unnest(range(0, len(tk), 48)) AS s
-         |  FROM base)
-         |SELECT doc_id, CAST(s // 48 AS BIGINT) AS chunk_id,
-         |  CAST(least(64, len(tk) - s) AS BIGINT) AS n_tokens,
-         |  array_to_string(tk[CAST(s + 1 AS INT):CAST(s + 64 AS INT)], ' ')
-         |    AS chunk_text
-         |FROM st ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "q87_bigram_surprisal" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, $toksSql AS tk FROM documents
-         |), bi AS (
-         |  SELECT doc_id, tk[CAST(i + 1 AS INT)] AS w1,
-         |    tk[CAST(i + 2 AS INT)] AS w2
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(range(0, greatest(len(tk) - 1, 0))) AS i
-         |        FROM base)
-         |), tf AS (
-         |  SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS tf
-         |  FROM bi GROUP BY 1, 2, 3
-         |), c2 AS (SELECT w1, w2, SUM(tf) AS c2 FROM tf GROUP BY 1, 2),
-         |c1 AS (SELECT w1, SUM(tf) AS c1 FROM tf GROUP BY 1),
-         |v AS (
-         |  SELECT CAST(COUNT(DISTINCT t) AS DOUBLE) AS vs
-         |  FROM (SELECT unnest(tk) AS t FROM base)
-         |), sc AS (
-         |  SELECT doc_id, tf,
-         |    ln((CAST(c2 AS DOUBLE) + 0.5) / (CAST(c1 AS DOUBLE) + 0.5 * vs))
-         |      AS lp
-         |  FROM tf JOIN c2 USING (w1, w2) JOIN c1 USING (w1), v
-         |), agg AS (
-         |  SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-         |    round(-CAST(SUM(CAST(CAST(tf AS DOUBLE) * lp AS DECIMAL(38,6)))
-         |        AS DOUBLE) / CAST(SUM(tf) AS DOUBLE), 6) AS surprisal
-         |  FROM sc GROUP BY doc_id)
-         |SELECT d.doc_id, COALESCE(a.n_bigrams, 0) AS n_bigrams,
-         |  COALESCE(a.surprisal, 0.0) AS surprisal
-         |FROM documents d LEFT JOIN agg a USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    "q88_dsir_resample" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, $toksSql AS tk FROM documents
-         |), tf AS (
-         |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS tf
-         |  FROM (SELECT doc_id, unnest(tk) AS t FROM base)
-         |  GROUP BY doc_id, t
-         |), raw AS (SELECT t, SUM(tf) AS c_raw FROM tf GROUP BY t),
-         |tgt AS (
-         |  SELECT t, SUM(tf) AS c_tgt FROM tf
-         |  JOIN documents USING (doc_id) WHERE source = 'src0' GROUP BY t
-         |), sc AS (
-         |  SELECT (SELECT CAST(SUM(c_raw) AS DOUBLE) FROM raw) AS n_raw,
-         |    (SELECT CAST(COUNT(*) AS DOUBLE) FROM raw) AS v_raw,
-         |    (SELECT CAST(COALESCE(SUM(c_tgt), 0) AS DOUBLE) FROM tgt)
-         |      AS n_tgt,
-         |    (SELECT CAST(COUNT(*) AS DOUBLE) FROM tgt) AS v_tgt
-         |), lr AS (
-         |  SELECT r.t,
-         |    ln((CAST(COALESCE(g.c_tgt, 0) AS DOUBLE) + 0.5)
-         |        / (n_tgt + 0.5 * v_tgt))
-         |      - ln((CAST(r.c_raw AS DOUBLE) + 0.5) / (n_raw + 0.5 * v_raw))
-         |      AS lratio
-         |  FROM raw r LEFT JOIN tgt g USING (t), sc
-         |), lw AS (
-         |  SELECT doc_id,
-         |    round(CAST(SUM(CAST(CAST(tf AS DOUBLE) * lratio
-         |      AS DECIMAL(38,6))) AS DOUBLE), 6) AS logw
-         |  FROM tf JOIN lr USING (t) GROUP BY doc_id
-         |), su AS (
-         |  SELECT doc_id, logw,
-         |    round(logw - ln(-ln(
-         |      (CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-         |        (strpos('0123456789abcdef',
-         |          substr(md5(CAST(doc_id AS VARCHAR)), i + 1, 1)) - 1)
-         |        for i in range(0, 8)]) AS DOUBLE) + 1.0) / 4294967297.0)), 6)
-         |      AS score
-         |  FROM lw)
-         |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT)
-         |    AS rk,
-         |  doc_id, logw, score
-         |FROM su ORDER BY score DESC, doc_id LIMIT 100""".stripMargin,
-
-    "q89_hard_negatives" ->
-      s"""WITH q AS (
-         |  SELECT vec_id AS qid, embedding AS qv, label AS ql
-         |  FROM embeddings WHERE vec_id < 30
-         |), c AS (
-         |  SELECT vec_id AS cid, embedding AS cv, label AS cl
-         |  FROM embeddings
-         |), p AS (
-         |  SELECT qid, cid,
-         |    ${dotSql("qv", "cv")} AS dot,
-         |    ${normSql("qv")} AS nq,
-         |    ${normSql("cv")} AS nc
-         |  FROM q, c WHERE qid <> cid AND ql IS DISTINCT FROM cl
-         |), scored AS (
-         |  SELECT qid AS query_id, cid AS neighbor_id,
-         |    round($cosSql, 6) AS sim
-         |  FROM p
-         |), ranked AS (
-         |  SELECT query_id, neighbor_id, sim,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS INT) AS rk
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5
-         |ORDER BY query_id, rk""".stripMargin,
-
-    "q90_decontaminate_bloom" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE
-        |      WHEN len(list_filter(regexp_split_to_array(text, '\s+'),
-        |        x -> x <> '')) < 5
-        |      THEN [array_to_string(list_filter(
-        |        regexp_split_to_array(text, '\s+'), x -> x <> ''), ' ')]
-        |      ELSE [array_to_string(list_filter(
-        |          regexp_split_to_array(text, '\s+'), x -> x <> '')[i+1:i+5],
-        |          ' ')
-        |        for i in range(0, len(list_filter(
-        |          regexp_split_to_array(text, '\s+'), x -> x <> '')) - 4)]
-        |      END) AS shingles
-        |  FROM documents
-        |), ev AS (
-        |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id < 10
-        |), corpus AS (
-        |  SELECT doc_id, unnest(shingles) AS s FROM sh WHERE doc_id >= 10)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
-        |FROM corpus JOIN ev USING (s)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q91_quality_classifier" ->
-      s"""WITH ${q91Ctes(32, 8.0)},
-         |scored AS (
-         |  SELECT f.doc_id,
-         |    round(1.0 / (1.0 + exp(-(${(0 to 4)
-            .map(j => s"w.w$j * f.x$j").mkString(" + ")}))), 6) AS p,
-         |    f.y
-         |  FROM feats f CROSS JOIN w32 w)
-         |SELECT doc_id, p, p >= 0.5 AS pred, y = 1.0 AS is_hq
-         |FROM scored ORDER BY doc_id""".stripMargin,
-
-    "q92_chunk_retrieval" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, $toksSql AS tk FROM documents
-         |), st AS (
-         |  SELECT doc_id, tk, unnest(range(0, len(tk), 48)) AS s
-         |  FROM base
-         |), ck AS (
-         |  SELECT doc_id * 1000 + s // 48 AS vec_id,
-         |    tk[CAST(s + 1 AS INT):CAST(s + 64 AS INT)] AS ctk
-         |  FROM st
-         |), bk AS (
-         |  SELECT vec_id, list_transform(ctk, t ->
-         |    CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-         |      (strpos('0123456789abcdef', substr(md5(t), i + 1, 1)) - 1)
-         |      for i in range(0, 8)]) % 32 AS BIGINT)) AS bl
-         |  FROM ck
-         |), vec AS (
-         |  SELECT vec_id, [CAST(len(list_filter(bl, b -> b = i)) AS DOUBLE)
-         |    for i in range(0, 32)] AS embedding
-         |  FROM bk
-         |), q AS (
-         |  SELECT vec_id AS qid, embedding AS qv FROM vec
-         |  WHERE vec_id < 3000
-         |), c AS (SELECT vec_id AS cid, embedding AS cv FROM vec),
-         |p AS (
-         |  SELECT qid, cid,
-         |    ${dotSql("qv", "cv")} AS dot,
-         |    ${normSql("qv")} AS nq,
-         |    ${normSql("cv")} AS nc
-         |  FROM q, c WHERE qid <> cid
-         |), scored AS (
-         |  SELECT qid AS query_id, cid AS neighbor_id,
-         |    round($cosSql, 6) AS sim
-         |  FROM p
-         |), ranked AS (
-         |  SELECT query_id, neighbor_id, sim,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS INT) AS rk
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 3
-         |ORDER BY query_id, rk""".stripMargin,
-
-    "q93_temperature_mix" ->
-      """WITH counts AS (
-        |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_total
-        |  FROM documents GROUP BY lang
-        |), tot AS (
-        |  SELECT SUM(n_total) AS n_corpus,
-        |    CAST(SUM(CAST(sqrt(CAST(n_total AS DOUBLE)) AS DECIMAL(38,6)))
-        |      AS DOUBLE) AS sw
-        |  FROM counts
-        |), thr AS (
-        |  SELECT lang, n_total,
-        |    round(sqrt(CAST(n_total AS DOUBLE)) / sw, 6) AS w,
-        |    lower(lpad(hex(LEAST(CAST(FLOOR(
-        |      (CAST(FLOOR(n_corpus / 2) AS DOUBLE)
-        |        * sqrt(CAST(n_total AS DOUBLE)) / sw
-        |        / CAST(n_total AS DOUBLE)) * 4294967296) AS BIGINT),
-        |      4294967295)), 8, '0')) AS t
-        |  FROM counts, tot
-        |), kept AS (
-        |  SELECT d.lang FROM documents d JOIN thr USING (lang)
-        |  WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < thr.t)
-        |SELECT k.lang, t.n_total, t.w, CAST(COUNT(*) AS BIGINT) AS n_kept
-        |FROM kept k JOIN thr t USING (lang)
-        |GROUP BY k.lang, t.n_total, t.w ORDER BY k.lang""".stripMargin,
-
-    "q94_semantic_decontaminate" ->
-      s"""WITH e AS (
-         |  SELECT vec_id AS e_id, embedding AS ev FROM embeddings
-         |  WHERE vec_id < 30
-         |), c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings),
-         |p AS (
-         |  SELECT cid, e_id,
-         |    ${dotSql("cv", "ev")} AS dot,
-         |    ${normSql("cv")} AS nq,
-         |    ${normSql("ev")} AS nc
-         |  FROM c, e WHERE cid <> e_id
-         |), scored AS (
-         |  SELECT cid, e_id, round($cosSql, 6) AS sim FROM p
-         |), hits AS (SELECT * FROM scored WHERE sim >= 0.35),
-         |m AS (
-         |  SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_hits, MAX(sim) AS sim
-         |  FROM hits GROUP BY cid
-         |), b AS (
-         |  SELECT h.cid, MIN(h.e_id) AS best_eval
-         |  FROM hits h JOIN m ON h.cid = m.cid AND h.sim = m.sim
-         |  GROUP BY h.cid)
-         |SELECT m.cid AS vec_id, m.n_hits, b.best_eval, m.sim
-         |FROM m JOIN b ON m.cid = b.cid ORDER BY vec_id""".stripMargin,
-
-    "q73_doc_tfidf" ->
-      """WITH terms AS (
-        |  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id,
-        |          unnest(list_filter(regexp_split_to_array(text, '\s+'),
-        |            x -> x <> '')) AS term
-        |        FROM documents)
-        |  GROUP BY doc_id, term
-        |), dft AS (
-        |  SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM terms
-        |  GROUP BY term
-        |), nd AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents),
-        |ranked AS (
-        |  SELECT t.doc_id, t.term, t.tf, d.df,
-        |    round(CAST(t.tf AS DOUBLE) * ln(n / CAST(d.df AS DOUBLE)), 6)
-        |      AS tfidf,
-        |    CAST(row_number() OVER (PARTITION BY t.doc_id
-        |      ORDER BY t.tf DESC, d.df ASC, t.term ASC) AS INT) AS rk
-        |  FROM terms t JOIN dft d USING (term), nd
-        |)
-        |SELECT doc_id, term, tf, df, tfidf, rk FROM ranked
-        |WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin,
-
-    "q67_doc_mix" ->
-      """WITH counts AS (
-        |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_total
-        |  FROM documents GROUP BY lang
-        |), m AS (SELECT MIN(n_total) AS minc FROM counts),
-        |thr AS (
-        |  SELECT lang, n_total,
-        |    lower(lpad(hex(LEAST(
-        |      CAST(FLOOR((CAST(minc AS DOUBLE) / CAST(n_total AS DOUBLE))
-        |        * 4294967296) AS BIGINT),
-        |      4294967295)), 8, '0')) AS t
-        |  FROM counts, m
-        |), kept AS (
-        |  SELECT d.lang, d.doc_id FROM documents d JOIN thr USING (lang)
-        |  WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < thr.t)
-        |SELECT lang, thr.n_total,
-        |  CAST(COUNT(*) AS BIGINT) AS n_kept,
-        |  min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM kept JOIN thr USING (lang)
-        |GROUP BY lang, thr.n_total ORDER BY lang""".stripMargin,
-
-    // single-window global cumsum is fine for the ORACLE (DuckDB is
-    // single-node); the Spark side must match it with the distributed
-    // two-phase prefix sum
-    "q66_doc_pack" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |), cum AS (
-        |  SELECT doc_id, n_tokens,
-        |    SUM(n_tokens) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-        |  FROM toks)
-        |SELECT CAST((c - n_tokens) // 2048 AS BIGINT) AS pack_id,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-        |FROM cum GROUP BY 1 ORDER BY pack_id""".stripMargin,
-
-    // q37's pipeline restricted to pairs touching a "new" (odd) doc id —
-    // the incremental batch-vs-index contract: old-vs-old pairs never form
-    "q65_dedup_incremental" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id, raw,
-        |    CASE WHEN len(raw) < 3 THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END AS shingles
-        |  FROM tk
-        |), sig AS (
-        |  SELECT doc_id, raw, shingles,
-        |    [list_min([md5(CAST(i AS VARCHAR) || '|' || s) for s in shingles])
-        |     for i in range(0, 16)] AS mh
-        |  FROM sh
-        |), banded AS (
-        |  SELECT doc_id, raw, shingles,
-        |    unnest([CAST(b AS VARCHAR) || '_'
-        |            || array_to_string(mh[b*4+1:b*4+4], '|')
-        |            for b in range(0, 4)]) AS bandkey
-        |  FROM sig
-        |), pairs AS (
-        |  SELECT DISTINCT l.doc_id AS a_id, r.doc_id AS b_id,
-        |    l.shingles AS a_sh, r.shingles AS b_sh
-        |  FROM banded l JOIN banded r ON l.bandkey = r.bandkey
-        |  WHERE l.doc_id < r.doc_id
-        |    AND (l.doc_id % 2 = 1 OR r.doc_id % 2 = 1)
-        |), verified AS (
-        |  SELECT a_id, b_id,
-        |    round(CASE WHEN len(list_distinct(list_concat(a_sh, b_sh))) = 0
-        |      THEN 0.0
-        |      ELSE CAST(len(list_intersect(list_distinct(a_sh),
-        |            list_distinct(b_sh))) AS DOUBLE)
-        |        / CAST(len(list_distinct(list_concat(a_sh, b_sh))) AS DOUBLE)
-        |      END, 6) AS sim
-        |  FROM pairs)
-        |SELECT a_id, b_id, sim FROM verified WHERE sim >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    // Ground-truth oracle for the seeded-FNV fast path: DuckDB cannot
-    // replicate the FNV banding, but the path's exact-Jaccard verify means
-    // its confirmed pairs are a subset of the true all-pairs >= threshold
-    // set — and equality against that set is exactly "LSH recall 1.0 on
-    // this data". The same-corpus q37 (md5 banding, faithfully replicated
-    // in DuckDB) triangulates the pipeline itself.
-    "q39_dedup_minhash_fast" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS shingles
-        |  FROM tk
-        |)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |    / CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
-        |        AS DOUBLE), 6) AS sim
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |    / CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
-        |        AS DOUBLE) >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q70_dedup_incr_fast" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS shingles
-        |  FROM tk
-        |)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |    / CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
-        |        AS DOUBLE), 6) AS sim
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE (a.doc_id % 2 = 1 OR b.doc_id % 2 = 1)
-        |  AND CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |    / CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
-        |        AS DOUBLE) >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q38_dedup_simhash" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_transform(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> x <> ''), t -> md5(t)) AS hashes
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  array_to_string([
-        |    substr('0123456789abcdef', 1 + list_sum([
-        |      CASE WHEN list_sum([
-        |        CASE WHEN ((strpos('0123456789abcdef',
-        |            substr(h, jj + 1, 1)) - 1) >> b) & 1 = 1
-        |          THEN 1 ELSE -1 END
-        |        for h in hashes]) > 0 THEN (1 << b) ELSE 0 END
-        |      for b in range(0, 4)])::INT, 1)
-        |    for jj in range(0, 16)], '') AS simhash
-        |FROM tk ORDER BY doc_id""".stripMargin,
-
-    "q40_knn_brute" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv FROM embeddings
-        |  WHERE vec_id < 30
-        |), c AS (
-        |  SELECT vec_id AS cid, embedding AS cv FROM embeddings
-        |), p AS (
-        |  SELECT qid, cid,
-        |    list_sum(list_transform(list_zip(qv, cv),
-        |      z -> CAST(CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)
-        |        AS DECIMAL(38,20)))) AS dot,
-        |    list_sum(list_transform(qv,
-        |      x -> CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |        AS DECIMAL(38,20)))) AS nq,
-        |    list_sum(list_transform(cv,
-        |      x -> CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |        AS DECIMAL(38,20)))) AS nc
-        |  FROM q, c WHERE qid <> cid
-        |), scored AS (
-        |  SELECT qid AS query_id, cid AS neighbor_id,
-        |    round(CASE WHEN nq = 0 OR nc = 0 THEN 0.0
-        |      ELSE CAST(dot AS DOUBLE)
-        |        / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(nc AS DOUBLE)))
-        |      END, 6) AS sim
-        |  FROM p
-        |), ranked AS (
-        |  SELECT query_id, neighbor_id, sim,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |      ORDER BY sim DESC, neighbor_id) AS INT) AS rk
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5
-        |ORDER BY query_id, rk""".stripMargin,
-
-    "q47_asof_join" ->
-      """WITH purchases AS (
-        |  SELECT event_id, user_id, ts FROM events
-        |  WHERE event_type = 'purchase'
-        |), clicks AS (
-        |  SELECT event_id AS click_id, user_id, ts, value AS click_value
-        |  FROM events WHERE event_type = 'click'
-        |)
-        |SELECT p.event_id, p.user_id, c.click_id, c.click_value
-        |FROM purchases p ASOF LEFT JOIN clicks c
-        |  ON p.user_id = c.user_id AND c.ts <= p.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q51_percentiles" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_quantity, 0.5), 6) AS p50,
-        |  round(quantile_cont(l_quantity, 0.95), 6) AS p95,
-        |  round(quantile_cont(l_extendedprice, 0.5), 6) AS med_price,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // q52/q53 are the same logical query (bucketed vs shuffled physical
-    // plan) — one oracle text, two entries
-    "q52_join_bucketed" ->
-      """SELECT o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-        |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q53_join_shuffled" ->
-      """SELECT o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-        |    AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    // ground-truth near-dup edges (the q39 CTE) -> transitive closure ->
-    // min reachable id per node = connected-component label
-    "q54_dedup_clusters" ->
-      """WITH RECURSIVE tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS shingles
-        |  FROM tk
-        |), pairs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
-        |          AS DOUBLE) >= 0.5
-        |), edges AS (
-        |  SELECT a_id AS s, b_id AS d FROM pairs
-        |  UNION SELECT b_id, a_id FROM pairs
-        |), reach(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION
-        |  SELECT r.s, e.d FROM reach r JOIN edges e ON e.s = r.d
-        |)
-        |SELECT s AS doc_id, least(s, min(d)) AS cluster_id
-        |FROM reach GROUP BY s ORDER BY doc_id""".stripMargin,
-
-    "q75_dedup_keep_best" -> (keepBestLabSql +
-      """
-        |SELECT b.cluster_id, MIN(l.doc_id) AS kept_id, b.n_members,
-        |  b.best_q
-        |FROM lab l JOIN best b
-        |  ON l.cluster_id = b.cluster_id AND l.q = b.best_q
-        |GROUP BY b.cluster_id, b.n_members, b.best_q
-        |ORDER BY b.cluster_id""".stripMargin),
-
-    "q312_recipe_after_dedup" -> (keepBestLabSql +
-      """, keptid AS (
-        |  SELECT MIN(l.doc_id) AS doc_id
-        |  FROM lab l JOIN best b
-        |    ON l.cluster_id = b.cluster_id AND l.q = b.best_q
-        |  GROUP BY b.cluster_id
-        |), perraw AS (
-        |  SELECT d.source, CAST(SUM(len(t.raw)) AS BIGINT) AS tokens_raw
-        |  FROM documents d JOIN tk t USING (doc_id) GROUP BY d.source
-        |), perk AS (
-        |  SELECT d.source, COUNT(*) AS n_docs,
-        |    CAST(SUM(len(t.raw)) AS BIGINT) AS tokens_avail
-        |  FROM documents d JOIN tk t USING (doc_id)
-        |  JOIN keptid k USING (doc_id)
-        |  GROUP BY d.source
-        |), g AS (SELECT COUNT(*) AS n_groups FROM perk
-        |), recipe AS (
-        |  SELECT source, n_docs, tokens_avail,
-        |    CAST(2000000 // n_groups AS BIGINT) AS target_tokens
-        |  FROM perk CROSS JOIN g
-        |), ep AS (
-        |  -- the mixturePlan zero-token branch (see q311's oracle): a
-        |  -- source whose KEPT docs are all empty must not divide by zero
-        |  SELECT *, CASE WHEN tokens_avail > 0
-        |      THEN LEAST((target_tokens + tokens_avail - 1)
-        |        // tokens_avail, 4)
-        |      ELSE 1 END AS epochs
-        |  FROM recipe)
-        |SELECT ep.source, CAST(ep.n_docs AS BIGINT) AS n_docs,
-        |  ep.tokens_avail, ep.target_tokens,
-        |  CASE WHEN ep.tokens_avail > 0
-        |    THEN round(CAST(ep.target_tokens AS DOUBLE)
-        |      / CAST(ep.tokens_avail AS DOUBLE), 6) END AS sampling_rate,
-        |  CAST(ep.epochs AS BIGINT) AS epochs,
-        |  CAST(CASE WHEN ep.tokens_avail > 0
-        |    THEN LEAST(ep.target_tokens, ep.tokens_avail * ep.epochs)
-        |    ELSE 0 END AS BIGINT) AS capped_tokens,
-        |  round(CAST(CASE WHEN ep.tokens_avail > 0
-        |    THEN LEAST(ep.target_tokens, ep.tokens_avail * ep.epochs)
-        |    ELSE 0 END AS DOUBLE) / 2000000.0, 6) AS achievable_share,
-        |  r.tokens_raw,
-        |  round(1.0 - CAST(ep.tokens_avail AS DOUBLE)
-        |    / CAST(r.tokens_raw AS DOUBLE), 6) AS dup_token_frac
-        |FROM ep JOIN perraw r USING (source)
-        |ORDER BY ep.source""".stripMargin),
-
-
-    "q55_pii_redact" ->
-      """WITH withpii AS (
-        |  SELECT doc_id,
-        |    text || ' contact user' || CAST(doc_id AS VARCHAR)
-        |      || '@example.com from 10.0.'
-        |      || CAST(doc_id % 256 AS VARCHAR) || '.7 ssn 123-45-'
-        |      || format('{:04d}', doc_id % 10000) AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-        |    '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b', '<SSN>', 'g') AS redacted,
-        |  CAST(len(regexp_extract_all(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT)
-        |    AS n_email,
-        |  CAST(len(regexp_extract_all(text,
-        |    '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS INT)
-        |    AS n_ip,
-        |  CAST(len(regexp_extract_all(text,
-        |    '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b')) AS INT) AS n_ssn
-        |FROM withpii ORDER BY doc_id""".stripMargin,
-
-    "q56_doc_repetition" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id, raw,
-        |    CASE WHEN len(raw) < 2 THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+2], ' ')
-        |            for i in range(0, len(raw) - 1)] END AS g2,
-        |    CASE WHEN len(raw) < 3 THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END AS g3
-        |  FROM tk
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN len(g2) <= 0 THEN 0.0 ELSE round(1.0 -
-        |    CAST(len(list_distinct(g2)) AS DOUBLE)
-        |      / CAST(len(g2) AS DOUBLE), 6) END AS dup2,
-        |  CASE WHEN len(g3) <= 0 THEN 0.0 ELSE round(1.0 -
-        |    CAST(len(list_distinct(g3)) AS DOUBLE)
-        |      / CAST(len(g3) AS DOUBLE), 6) END AS dup3,
-        |  CASE WHEN len(raw) <= 0 THEN 0.0 ELSE round(1.0 -
-        |    CAST(len(list_distinct(raw)) AS DOUBLE)
-        |      / CAST(len(raw) AS DOUBLE), 6) END AS dup_word
-        |FROM sh ORDER BY doc_id""".stripMargin,
-
-    "q62_token_freq" ->
-      """SELECT token, COUNT(*) AS n
-        |FROM (SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'),
-        |        x -> x <> '')) AS token
-        |      FROM documents)
-        |GROUP BY token ORDER BY n DESC, token LIMIT 50""".stripMargin,
-
-    "q63_hash_split" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'
-        |      THEN 'train'
-        |    WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'e'
-        |      THEN 'val'
-        |    ELSE 'test' END AS split
-        |  FROM documents)
-        |SELECT split, COUNT(*) AS n, min(doc_id) AS min_id,
-        |  max(doc_id) AS max_id
-        |FROM s GROUP BY split ORDER BY split""".stripMargin,
-
-    // conditional aggregation == pivot with an explicit value list (both
-    // yield NULL for absent (day, type) combinations)
-    "q59_evt_pivot" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day,
-        |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT)
-        |    AS click,
-        |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT)
-        |    AS error,
-        |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT)
-        |    AS purchase,
-        |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT)
-        |    AS signup,
-        |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT)
-        |    AS view
-        |FROM events GROUP BY 1 ORDER BY day""".stripMargin,
-
-    "q60_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-        |  (l_returnflag), ())
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""
-        .stripMargin,
-
-    "q61_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, metric, val
-        |FROM (SELECT l_orderkey, l_linenumber, l_quantity,
-        |        l_extendedprice, l_discount, l_tax
-        |      FROM lineitem WHERE l_orderkey < 1000)
-        |UNPIVOT (val FOR metric IN (l_quantity, l_extendedprice,
-        |  l_discount, l_tax))
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
-
-    // all-pairs hamming <= 3 IS the banded result: 4-block banding has
-    // guaranteed recall at that threshold (pigeonhole), and the exact
-    // verify removes any extra candidates — the sets are equal by
-    // construction, so the oracle needs no banding replication
-    "q58_simhash_pairs" -> simhashPairsSql,
-
-    "q57_vec_quantize" ->
-      """WITH m AS (
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding,
-        |      x -> abs(CAST(x AS DOUBLE)))) AS amax
-        |  FROM embeddings)
-        |SELECT vec_id,
-        |  CASE WHEN amax = 0
-        |    THEN array_to_string(list_transform(embedding, x -> 0), ',')
-        |    ELSE array_to_string(list_transform(embedding,
-        |      x -> CAST(floor(CAST(x AS DOUBLE) / (amax / 127.0) + 0.5)
-        |        AS INT)), ',') END AS codes,
-        |  round(amax / 127.0, 9) AS scale
-        |FROM m ORDER BY vec_id""".stripMargin,
-
-    "q48_doc_normalize" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS norm_text,
-        |  md5(trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS norm_hash
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q49_union_all" ->
-      """SELECT nationkey, side, COUNT(*) AS n FROM (
-        |  SELECT c_nationkey AS nationkey, 'customer' AS side FROM customer
-        |  UNION ALL
-        |  SELECT s_nationkey AS nationkey, 'supplier' AS side FROM supplier
-        |) u GROUP BY nationkey, side ORDER BY nationkey, side""".stripMargin,
-
-    "q50_set_intersect" ->
-      """SELECT nationkey FROM (
-        |  SELECT DISTINCT c_nationkey AS nationkey FROM customer
-        |  INTERSECT
-        |  SELECT DISTINCT s_nationkey AS nationkey FROM supplier) s
-        |ORDER BY nationkey""".stripMargin,
-
-    "q41_ann_lsh" ->
-      s"""WITH ${bucketCtes(8)},
-         |q AS (
-         |  SELECT e.vec_id AS qid, e.embedding AS qv, b.bucket
-         |  FROM embeddings e JOIN buckets b USING (vec_id)
-         |  WHERE e.vec_id < 30
-         |), c AS (
-         |  SELECT e.vec_id AS cid, e.embedding AS cv, b.bucket
-         |  FROM embeddings e JOIN buckets b USING (vec_id)
-         |), p AS (
-         |  SELECT qid, cid,
-         |    ${dotSql("qv", "cv")} AS dot,
-         |    ${normSql("qv")} AS nq,
-         |    ${normSql("cv")} AS nc
-         |  FROM q JOIN c USING (bucket) WHERE qid <> cid
-         |), scored AS (
-         |  SELECT qid AS query_id, cid AS neighbor_id,
-         |    round($cosSql, 6) AS sim
-         |  FROM p
-         |), ranked AS (
-         |  SELECT query_id, neighbor_id, sim,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS INT) AS rk
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5
-         |ORDER BY query_id, rk""".stripMargin,
-
-    "q64_ann_lsh_multiprobe" ->
-      s"""WITH ${bucketCtes(8)},
-         |q AS (
-         |  SELECT e.vec_id AS qid, e.embedding AS qv, b.bucket AS bucket0
-         |  FROM embeddings e JOIN buckets b USING (vec_id)
-         |  WHERE e.vec_id < 30
-         |), qp AS (
-         |  SELECT DISTINCT qid, qv, CASE WHEN i.range < 0 THEN bucket0
-         |    ELSE xor(bucket0, CAST(pow(2, i.range) AS BIGINT)) END AS bucket
-         |  FROM q, range(-1, 8) i
-         |), c AS (
-         |  SELECT e.vec_id AS cid, e.embedding AS cv, b.bucket
-         |  FROM embeddings e JOIN buckets b USING (vec_id)
-         |), p AS (
-         |  SELECT qid, cid,
-         |    ${dotSql("qv", "cv")} AS dot,
-         |    ${normSql("qv")} AS nq,
-         |    ${normSql("cv")} AS nc
-         |  FROM qp JOIN c USING (bucket) WHERE qid <> cid
-         |), scored AS (
-         |  SELECT qid AS query_id, cid AS neighbor_id,
-         |    round($cosSql, 6) AS sim
-         |  FROM p
-         |), ranked AS (
-         |  SELECT query_id, neighbor_id, sim,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS INT) AS rk
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5
-         |ORDER BY query_id, rk""".stripMargin,
-
-    "q42_emb_neardup" ->
-      s"""WITH ${bucketCtes(6)},
-         |l AS (
-         |  SELECT e.vec_id AS a_id, e.embedding AS av, b.bucket
-         |  FROM embeddings e JOIN buckets b USING (vec_id)
-         |), r AS (
-         |  SELECT e.vec_id AS b_id, e.embedding AS bv, b.bucket
-         |  FROM embeddings e JOIN buckets b USING (vec_id)
-         |), p AS (
-         |  SELECT a_id, b_id,
-         |    ${dotSql("av", "bv")} AS dot,
-         |    ${normSql("av")} AS nq,
-         |    ${normSql("bv")} AS nc
-         |  FROM l JOIN r USING (bucket) WHERE a_id < b_id
-         |), scored AS (
-         |  SELECT DISTINCT a_id, b_id, round($cosSql, 6) AS sim FROM p)
-         |SELECT a_id, b_id, sim FROM scored WHERE sim >= 0.4
-         |ORDER BY a_id, b_id""".stripMargin,
-
-    "q46_ann_ivf" ->
-      s"""WITH seeds AS (
-         |  SELECT vec_id AS cell_id, embedding AS s_vec FROM embeddings
-         |  WHERE vec_id < 8
-         |), assign_all AS (
-         |  SELECT e.vec_id, s.cell_id,
-         |    ${dotSql("e.embedding", "s.s_vec")} AS dot,
-         |    ${normSql("e.embedding")} AS nq,
-         |    ${normSql("s.s_vec")} AS nc
-         |  FROM embeddings e, seeds s
-         |), assigned AS (
-         |  SELECT vec_id, cell_id FROM (
-         |    SELECT vec_id, cell_id, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |      ORDER BY round($cosSql, 9) DESC, cell_id) AS rn
-         |    FROM assign_all) sub
-         |  WHERE rn = 1
-         |), q AS (
-         |  SELECT a.cell_id, e.vec_id AS qid, e.embedding AS qv
-         |  FROM embeddings e JOIN assigned a USING (vec_id)
-         |  WHERE e.vec_id < 30
-         |), c AS (
-         |  SELECT a.cell_id, e.vec_id AS cid, e.embedding AS cv
-         |  FROM embeddings e JOIN assigned a USING (vec_id)
-         |), p AS (
-         |  SELECT qid, cid,
-         |    ${dotSql("qv", "cv")} AS dot,
-         |    ${normSql("qv")} AS nq,
-         |    ${normSql("cv")} AS nc
-         |  FROM q JOIN c USING (cell_id) WHERE qid <> cid
-         |), scored AS (
-         |  SELECT qid AS query_id, cid AS neighbor_id,
-         |    round($cosSql, 6) AS sim
-         |  FROM p
-         |), ranked AS (
-         |  SELECT query_id, neighbor_id, sim,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS INT) AS rk
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, sim, rk FROM ranked WHERE rk <= 5
-         |ORDER BY query_id, rk""".stripMargin,
-
-    "q43_mm_features" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
-        |      WHEN 1 THEN 'audio' ELSE 'video' END AS modality
-        |  FROM documents)
-        |SELECT doc_id, modality,
-        |  CAST(CASE WHEN modality = 'image' THEN doc_id % 64 + 1
-        |    WHEN modality = 'audio' THEN 8000 + (doc_id % 2) * 8000
-        |    ELSE doc_id % 16 + 2 END AS BIGINT) AS width,
-        |  CAST(CASE WHEN modality = 'image' THEN doc_id % 48 + 1
-        |    WHEN modality = 'audio' THEN 0
-        |    ELSE doc_id % 12 + 2 END AS BIGINT) AS height,
-        |  CAST(CASE WHEN modality = 'image' THEN 1
-        |    WHEN modality = 'audio' THEN doc_id % 500 + 50
-        |    ELSE doc_id % 12 + 1 END AS BIGINT) AS n_frames,
-        |  CAST(CASE WHEN modality = 'audio' THEN 1 ELSE 3
-        |    END AS BIGINT) AS channels,
-        |  CAST(CASE WHEN modality = 'image' THEN doc_id % 256
-        |    WHEN modality = 'audio' THEN doc_id % 1000
-        |    ELSE list_sum([(doc_id * 31 + f * 17) % 256
-        |      for f in range(0, CAST(doc_id % 12 + 1 AS INT))])
-        |      // (doc_id % 12 + 1) END AS BIGINT) AS mean_red,
-        |  TRUE AS decoded
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    "q69_mm_decode" ->
-      """SELECT doc_id,
-        |  CAST(doc_id % 64 + 1 AS BIGINT) AS width,
-        |  CAST(doc_id % 48 + 1 AS BIGINT) AS height,
-        |  CAST(3 AS BIGINT) AS channels,
-        |  CAST(doc_id % 256 AS BIGINT) AS mean_red,
-        |  TRUE AS decoded
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q44_mm_frames" ->
-      """WITH m AS (
-        |  SELECT doc_id FROM documents WHERE CAST(doc_id % 3 AS INT) = 2
-        |)
-        |SELECT doc_id,
-        |  unnest(range(0, CAST(doc_id % 12 + 1 AS BIGINT), 3)) AS frame_idx,
-        |  CAST((doc_id * 31 +
-        |    unnest(range(0, CAST(doc_id % 12 + 1 AS BIGINT), 3)) * 17) % 256
-        |    AS BIGINT) AS mean_red
-        |FROM m ORDER BY doc_id, frame_idx""".stripMargin,
-
-    "q95_shard_plan" ->
-      """WITH k AS (
-        |  SELECT doc_id, n_chars, source,
-        |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS shard_key,
-        |    CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |      (strpos('0123456789abcdef',
-        |        substr(md5(CAST(doc_id AS VARCHAR)), i + 1, 1)) - 1)
-        |      for i in range(0, 8)]) AS BIGINT) % 16 AS shard
-        |  FROM documents)
-        |SELECT CAST(shard AS INT) AS shard,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS n_bytes,
-        |  CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
-        |  MIN(shard_key) AS first_key, MAX(shard_key) AS last_key
-        |FROM k GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "q96_quantile_sketch" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-        |  TRUE AS users_within_tol,
-        |  TRUE AS p50_rank_ok, TRUE AS p95_rank_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q97_source_cap" ->
-      s"""WITH stats AS (
-         |  SELECT doc_id, source,
-         |    CASE WHEN length(text) = 0 THEN 0.0
-         |      ELSE CAST(length(regexp_replace(text,
-         |          '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-         |        / CAST(length(text) AS DOUBLE) END AS punct_ratio,
-         |    CASE WHEN len(tk) = 0 THEN 0.0
-         |      ELSE CAST(len(list_filter(tk,
-         |          t -> list_contains($stopwordsSql, lower(t)))) AS DOUBLE)
-         |        / CAST(len(tk) AS DOUBLE) END AS stopword_ratio,
-         |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS len_score
-         |  FROM (SELECT doc_id, source, text, $toksSql AS tk
-         |        FROM documents)
-         |), q AS (
-         |  SELECT doc_id, source,
-         |    round(len_score * (1.0 - punct_ratio)
-         |      * (0.5 + stopword_ratio / 2.0), 6) AS score
-         |  FROM stats
-         |), r AS (
-         |  SELECT source, doc_id, score,
-         |    CAST(row_number() OVER (PARTITION BY source
-         |      ORDER BY score DESC, doc_id) AS INT) AS rk
-         |  FROM q)
-         |SELECT source, doc_id, score, rk FROM r
-         |WHERE rk <= 50 ORDER BY source, rk""".stripMargin,
-
-    "q98_cdc_chunks" ->
-      """WITH pos AS (
-        |  SELECT doc_id, text,
-        |    unnest(range(1, greatest(len(text) - 7, 1) + 1)) AS i
-        |  FROM documents
-        |), trig AS (
-        |  SELECT doc_id, i + 8 AS st FROM pos
-        |  WHERE substr(md5(substr(text, CAST(i AS INT), 8)), 1, 1) = '0'
-        |    AND i + 8 <= len(text)
-        |), starts AS (
-        |  SELECT doc_id, 1 AS st FROM documents
-        |  UNION SELECT doc_id, CAST(st AS INT) AS st FROM trig
-        |), seq AS (
-        |  SELECT doc_id, st,
-        |    lead(st) OVER (PARTITION BY doc_id ORDER BY st) AS nxt,
-        |    CAST(row_number() OVER (PARTITION BY doc_id ORDER BY st)
-        |      AS INT) AS chunk_id
-        |  FROM starts
-        |), ch AS (
-        |  SELECT s.doc_id, chunk_id, CAST(st AS INT) AS start_pos,
-        |    CAST(COALESCE(nxt, len(d.text) + 1) - st AS INT) AS chunk_len,
-        |    md5(substr(d.text, CAST(st AS INT),
-        |      CAST(COALESCE(nxt, len(d.text) + 1) - st AS INT))) AS digest
-        |  FROM seq s JOIN documents d USING (doc_id)
-        |)
-        |SELECT doc_id, chunk_id, start_pos, chunk_len, digest,
-        |  CAST(COUNT(*) OVER (PARTITION BY digest) AS BIGINT) AS n_dups
-        |FROM ch ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "q99_pack_bpe" ->
-      s"""WITH tk AS (
-         |  SELECT doc_id,
-         |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
-         |      AS raw
-         |  FROM documents
-         |), w AS (
-         |  SELECT doc_id, unnest(raw) AS word FROM tk
-         |), cnt AS (
-         |  SELECT doc_id,
-         |    CAST(SUM(${graft.operators.Bpe.replaySqlTokenCount("word",
-                  graft.operators.Bpe.FixtureMerges)}) AS BIGINT) AS n_bpe
-         |  FROM w GROUP BY doc_id
-         |), toks AS (
-         |  SELECT tk.doc_id, COALESCE(cnt.n_bpe, 0) AS n_tokens
-         |  FROM tk LEFT JOIN cnt USING (doc_id)
-         |), cum AS (
-         |  SELECT doc_id, n_tokens,
-         |    SUM(n_tokens) OVER (ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-         |  FROM toks)
-         |SELECT CAST((c - n_tokens) // 2048 AS BIGINT) AS pack_id,
-         |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-         |FROM cum GROUP BY 1 ORDER BY pack_id""".stripMargin,
-
-    "q100_event_context" ->
-      """WITH lagged AS (
-        |  SELECT event_type AS next_type,
-        |    lag(event_type, 1) OVER w AS p1,
-        |    lag(event_type, 2) OVER w AS p2,
-        |    lag(event_type, 3) OVER w AS p3
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |)
-        |SELECT p3, p2, p1, next_type, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM lagged WHERE p3 IS NOT NULL
-        |GROUP BY p3, p2, p1, next_type
-        |ORDER BY p3, p2, p1, next_type""".stripMargin,
-
-    "q101_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id, MIN(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id
-        |), s2 AS (
-        |  SELECT e.user_id, MIN(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1
-        |  GROUP BY e.user_id
-        |), s3 AS (
-        |  SELECT e.user_id, MIN(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-        |  GROUP BY e.user_id
-        |)
-        |SELECT stage_idx, stage, n_users FROM (
-        |  SELECT 1 AS stage_idx, 'view' AS stage,
-        |    (SELECT CAST(COUNT(*) AS BIGINT) FROM s1) AS n_users
-        |  UNION ALL SELECT 2, 'click',
-        |    (SELECT CAST(COUNT(*) AS BIGINT) FROM s2)
-        |  UNION ALL SELECT 3, 'purchase',
-        |    (SELECT CAST(COUNT(*) AS BIGINT) FROM s3))
-        |ORDER BY stage_idx""".stripMargin,
-
-    "q102_retention" ->
-      """WITH d AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
-        |), f AS (
-        |  SELECT user_id, MIN(day) AS cohort_day FROM d GROUP BY user_id
-        |)
-        |SELECT strftime(f.cohort_day, '%Y-%m-%d') AS cohort_day,
-        |  CAST(datediff('day', f.cohort_day, d.day) AS INT) AS day_offset,
-        |  CAST(COUNT(DISTINCT d.user_id) AS BIGINT) AS n_users
-        |FROM d JOIN f USING (user_id)
-        |WHERE datediff('day', f.cohort_day, d.day) <= 7
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // the oracle may use the inequality join + rank window (DuckDB is
-    // single-node); the Spark side must match it with the one-shuffle
-    // as-of carry-forward
-    "q103_attribution" ->
-      """WITH p AS (
-        |  SELECT user_id, ts, event_id FROM events
-        |  WHERE event_type = 'purchase'
-        |), tch AS (
-        |  SELECT user_id, ts, event_id, event_type FROM events
-        |  WHERE event_type <> 'purchase'
-        |), j AS (
-        |  SELECT p.event_id AS pid, tch.event_type AS touch,
-        |    row_number() OVER (PARTITION BY p.event_id
-        |      ORDER BY tch.ts DESC, tch.event_id DESC) AS rn
-        |  FROM p JOIN tch ON tch.user_id = p.user_id AND tch.ts <= p.ts
-        |), best AS (SELECT pid, touch FROM j WHERE rn = 1)
-        |SELECT COALESCE(best.touch, 'none') AS touch_type,
-        |  CAST(COUNT(*) AS BIGINT) AS n_purchases
-        |FROM p LEFT JOIN best ON best.pid = p.event_id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q104_error_spikes" ->
-      """WITH daily AS (
-        |  SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-        |    CAST(COUNT(*) AS BIGINT) AS n_events,
-        |    CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_errors
-        |  FROM events GROUP BY 1
-        |), trail AS (
-        |  SELECT day, n_events, n_errors,
-        |    SUM(n_events) OVER w AS prior_events,
-        |    SUM(n_errors) OVER w AS prior_errors
-        |  FROM daily
-        |  WINDOW w AS (ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-        |)
-        |SELECT day, n_events, n_errors,
-        |  (CAST(n_errors AS DECIMAL(38,18)) * prior_events
-        |    > CAST(n_events AS DECIMAL(38,18)) * prior_errors * 2) AS spike
-        |FROM trail WHERE prior_events IS NOT NULL
-        |ORDER BY day""".stripMargin,
-
-    // q37's md5 minhash algebra over two DISJOINT source slices, joined
-    // across slices with no canonicalization — record linkage, not dedup
-    "q105_fuzzy_join" ->
-      """WITH tk AS (
-        |  SELECT doc_id, CAST(substr(source, 4) AS INT) AS src_num,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id, src_num,
-        |    CASE WHEN len(raw) < 3 THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END AS shingles
-        |  FROM tk
-        |), sig AS (
-        |  SELECT doc_id, src_num, shingles,
-        |    [list_min([md5(CAST(i AS VARCHAR) || '|' || s) for s in shingles])
-        |     for i in range(0, 16)] AS mh
-        |  FROM sh
-        |), banded AS (
-        |  SELECT doc_id, src_num, shingles,
-        |    unnest([CAST(b AS VARCHAR) || '_'
-        |            || array_to_string(mh[b*4+1:b*4+4], '|')
-        |            for b in range(0, 4)]) AS bandkey
-        |  FROM sig
-        |), pairs AS (
-        |  SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id,
-        |    l.shingles AS l_sh, r.shingles AS r_sh
-        |  FROM banded l JOIN banded r ON l.bandkey = r.bandkey
-        |  WHERE l.src_num < 10 AND r.src_num >= 10
-        |), verified AS (
-        |  SELECT left_id, right_id,
-        |    round(CASE WHEN len(list_distinct(list_concat(l_sh, r_sh))) = 0
-        |      THEN 0.0
-        |      ELSE CAST(len(list_intersect(list_distinct(l_sh),
-        |            list_distinct(r_sh))) AS DOUBLE)
-        |        / CAST(len(list_distinct(list_concat(l_sh, r_sh))) AS DOUBLE)
-        |      END, 6) AS sim
-        |  FROM pairs)
-        |SELECT left_id, right_id, sim FROM verified WHERE sim >= 0.3
-        |ORDER BY left_id, right_id""".stripMargin,
-
-    "q106_heavy_hitters" ->
-      """WITH tk AS (
-        |  SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'),
-        |    x -> x <> '')) AS token
-        |  FROM documents
-        |), tot AS (SELECT COUNT(*) AS n FROM tk)
-        |SELECT token, CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-        |  TRUE AS est_ge_exact, TRUE AS est_within_bound
-        |FROM tk, tot GROUP BY token, tot.n
-        |HAVING CAST(COUNT(*) AS DOUBLE) >= 0.002 * n
-        |ORDER BY token""".stripMargin,
-
-    // the q91 pattern: DuckDB RE-RUNS all 5 PageRank iterations through an
-    // unrolled MATERIALIZED CTE chain and must land on identical bits —
-    // per-edge double division, DECIMAL(38,20) contribution sums,
-    // round(.,12) re-quantization each iteration
-    "q107_pagerank" -> {
-      val iter = (k: Int) =>
-        s"""r$k AS MATERIALIZED (
-           |  SELECT n.node,
-           |    round(CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE)
-           |      * CAST(COALESCE(s.c, 0) AS DOUBLE), 12) AS r
-           |  FROM r${k - 1} n LEFT JOIN (
-           |    SELECT e.dst AS node,
-           |      SUM(CAST(r.r / d.d AS DECIMAL(38,20))) AS c
-           |    FROM edges e
-           |    JOIN r${k - 1} r ON r.node = e.src
-           |    JOIN deg d ON d.src = e.src
-           |    GROUP BY e.dst) s ON s.node = n.node)""".stripMargin
-      s"""WITH base AS MATERIALIZED (
-         |  SELECT DISTINCT 'c' || o_custkey AS c, 's' || l_suppkey AS p
-         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-         |edges AS MATERIALIZED (
-         |  SELECT c AS src, p AS dst FROM base
-         |  UNION ALL SELECT p AS src, c AS dst FROM base),
-         |deg AS MATERIALIZED (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
-         |r0 AS MATERIALIZED (
-         |  SELECT src AS node, CAST(1.0 AS DOUBLE) AS r FROM deg),
-         |${(1 to 5).map(iter).mkString(",\n")}
-         |SELECT node, r AS rank FROM r5 ORDER BY node""".stripMargin
-    },
-
-    // q54's ground-truth closure over the FULL corpus: the incremental
-    // label update must land on exactly the full recompute's clusters
-    "q108_clusters_incr" ->
-      """WITH RECURSIVE tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS shingles
-        |  FROM tk
-        |), pairs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
-        |          AS DOUBLE) >= 0.5
-        |), edges AS (
-        |  SELECT a_id AS s, b_id AS d FROM pairs
-        |  UNION SELECT b_id, a_id FROM pairs
-        |), reach(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION
-        |  SELECT r.s, e.d FROM reach r JOIN edges e ON e.s = r.d
-        |)
-        |SELECT s AS doc_id, least(s, min(d)) AS cluster_id
-        |FROM reach GROUP BY s ORDER BY doc_id""".stripMargin,
-
-    "q109_interval_join" ->
-      """SELECT e.user_id, e.event_id, r.event_id AS err_id,
-        |  abs(epoch_us(e.ts) - epoch_us(r.ts)) AS gap_us
-        |FROM events e JOIN events r
-        |  ON e.user_id = r.user_id AND r.event_type = 'error'
-        | AND e.ts BETWEEN r.ts - INTERVAL 600 SECOND
-        |              AND r.ts + INTERVAL 600 SECOND
-        | AND e.event_id <> r.event_id
-        |ORDER BY 1, 2, 3""".stripMargin,
-
-    "q110_filter_funnel" ->
-      s"""WITH stats AS (
-         |  SELECT doc_id, source, lang, n_chars,
-         |    CASE WHEN length(text) = 0 THEN 0.0
-         |      ELSE CAST(length(regexp_replace(text,
-         |          '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-         |        / CAST(length(text) AS DOUBLE) END AS punct_ratio,
-         |    CASE WHEN len(tk) = 0 THEN 0.0
-         |      ELSE CAST(len(list_filter(tk,
-         |          t -> list_contains($stopwordsSql, lower(t)))) AS DOUBLE)
-         |        / CAST(len(tk) AS DOUBLE) END AS stopword_ratio,
-         |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0) AS len_score
-         |  FROM (SELECT doc_id, source, lang, n_chars, text, $toksSql AS tk
-         |        FROM documents)
-         |), b AS (
-         |  SELECT source NOT IN ('src17', 'src18', 'src19') AS b1,
-         |    lang = 'en' AS b2, n_chars >= 200 AS b3,
-         |    round(len_score * (1.0 - punct_ratio)
-         |      * (0.5 + stopword_ratio / 2.0), 6) >= 0.3 AS b4
-         |  FROM stats
-         |), c AS (
-         |  SELECT count(*) AS s0,
-         |    count(*) FILTER (b1) AS s1,
-         |    count(*) FILTER (b1 AND b2) AS s2,
-         |    count(*) FILTER (b1 AND b2 AND b3) AS s3,
-         |    count(*) FILTER (b1 AND b2 AND b3 AND b4) AS s4
-         |  FROM b
-         |)
-         |SELECT * FROM (
-         |  SELECT 0 AS stage_id, 'total' AS stage, s0 AS surviving,
-         |    CAST(0 AS BIGINT) AS dropped FROM c
-         |  UNION ALL SELECT 1, 'blocklist', s1, s0 - s1 FROM c
-         |  UNION ALL SELECT 2, 'lang_en', s2, s1 - s2 FROM c
-         |  UNION ALL SELECT 3, 'min_len', s3, s2 - s3 FROM c
-         |  UNION ALL SELECT 4, 'quality', s4, s3 - s4 FROM c)
-         |ORDER BY stage_id""".stripMargin,
-
-    "q111_range_window" ->
-      """SELECT user_id, event_id, ts,
-        |  COUNT(*) OVER w AS n_1h,
-        |  CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER w AS DOUBLE) AS sum_1h
-        |FROM (SELECT user_id, event_id, ts, value,
-        |        CAST(epoch_us(ts) // 1000000 AS BIGINT) AS ts_s FROM events)
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts_s
-        |  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q112_gopher_rules" ->
-      s"""WITH st AS (
-         |  SELECT doc_id,
-         |    CAST(len($toksSql) AS BIGINT) AS n_words,
-         |    CAST(coalesce(list_sum(list_transform($toksSql,
-         |      t -> length(t))), 0) AS BIGINT) AS word_chars,
-         |    CAST(len(list_filter($toksSql, t -> list_contains(
-         |      ['the','and','of','to','is','in','that','it'],
-         |      lower(t)))) AS BIGINT) AS stop_cnt,
-         |    CAST(len(list_filter($toksSql,
-         |      t -> regexp_matches(t, '[A-Za-z]'))) AS BIGINT)
-         |      AS alpha_words,
-         |    CAST(length(text) - length(replace(text, '#', ''))
-         |      + len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT)
-         |      AS symbol_cnt
-         |  FROM documents
-         |)
-         |SELECT doc_id, n_words, word_chars, stop_cnt, alpha_words,
-         |  symbol_cnt,
-         |  CAST(CASE WHEN n_words BETWEEN 50 AND 100000 THEN 0 ELSE 1 END
-         |    + CASE WHEN word_chars >= 3 * n_words
-         |        AND word_chars <= 10 * n_words THEN 0 ELSE 1 END
-         |    + CASE WHEN stop_cnt >= 2 THEN 0 ELSE 1 END
-         |    + CASE WHEN 5 * alpha_words >= 4 * n_words THEN 0 ELSE 1 END
-         |    + CASE WHEN 10 * symbol_cnt <= n_words THEN 0 ELSE 1 END
-         |    AS BIGINT) AS n_fail,
-         |  (CASE WHEN n_words BETWEEN 50 AND 100000 THEN 0 ELSE 1 END
-         |    + CASE WHEN word_chars >= 3 * n_words
-         |        AND word_chars <= 10 * n_words THEN 0 ELSE 1 END
-         |    + CASE WHEN stop_cnt >= 2 THEN 0 ELSE 1 END
-         |    + CASE WHEN 5 * alpha_words >= 4 * n_words THEN 0 ELSE 1 END
-         |    + CASE WHEN 10 * symbol_cnt <= n_words THEN 0 ELSE 1 END)
-         |    = 0 AS keep
-         |FROM st ORDER BY doc_id""".stripMargin,
-
-    "q113_url_dedup" ->
-      """SELECT 'https://www.site' || CAST((doc_id // 4) % 20 AS VARCHAR)
-        |    || '.example.com/docs/' || CAST(doc_id // 4 AS VARCHAR)
-        |    || '?page=' || CAST((doc_id // 4) % 3 AS VARCHAR)
-        |    AS canonical_url,
-        |  min(doc_id) AS keeper_id, COUNT(*) AS n_variants
-        |FROM documents
-        |GROUP BY 1 ORDER BY canonical_url""".stripMargin,
-
-    "q114_audio_neardup" ->
-      """WITH m AS (
-        |  SELECT greatest(COUNT(*) // 20, 1) AS ng FROM documents
-        |), ids AS (
-        |  SELECT doc_id FROM documents WHERE doc_id % 100 <> 99
-        |), bits AS (
-        |  SELECT doc_id, CAST(j AS BIGINT) AS j,
-        |    CAST((
-        |      ((doc_id % ng) % (53 + j)) % 2
-        |      + CASE WHEN ((doc_id // ng) % 3) >= 1
-        |          AND j = (doc_id * 13) % 64 THEN 1 ELSE 0 END
-        |      + CASE WHEN ((doc_id // ng) % 3) = 2
-        |          AND j = (doc_id * 29 + 7) % 64 THEN 1 ELSE 0 END
-        |    ) % 2 AS BIGINT) AS bit
-        |  FROM ids, m, unnest(range(0, 64)) AS t(j)
-        |), blocks AS (
-        |  SELECT doc_id, j // 16 AS b, SUM(bit << (15 - (j % 16))) AS v
-        |  FROM bits GROUP BY doc_id, j // 16
-        |), cand AS (
-        |  SELECT DISTINCT l.doc_id AS a_id, r.doc_id AS b_id
-        |  FROM blocks l JOIN blocks r
-        |    ON l.b = r.b AND l.v = r.v AND l.doc_id < r.doc_id
-        |), ham AS (
-        |  SELECT c.a_id, c.b_id,
-        |    CAST(SUM(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS hamming
-        |  FROM cand c
-        |  JOIN bits ba ON ba.doc_id = c.a_id
-        |  JOIN bits bb ON bb.doc_id = c.b_id AND bb.j = ba.j
-        |  GROUP BY c.a_id, c.b_id
-        |)
-        |SELECT a_id, b_id, hamming FROM ham WHERE hamming <= 3
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q115_snapshot_diff" ->
-      """WITH old_snap AS (
-        |  SELECT doc_id, md5(text) AS old_hash FROM documents
-        |  WHERE doc_id % 7 <> 3
-        |), new_snap AS (
-        |  SELECT doc_id,
-        |    md5(CASE WHEN doc_id % 5 = 0 THEN text || ' v2'
-        |        ELSE text END) AS new_hash
-        |  FROM documents WHERE doc_id % 11 <> 5
-        |)
-        |SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-        |  CASE WHEN o.old_hash IS NULL THEN 'added'
-        |       WHEN n.new_hash IS NULL THEN 'removed'
-        |       WHEN o.old_hash = n.new_hash THEN 'unchanged'
-        |       ELSE 'modified' END AS status,
-        |  o.old_hash, n.new_hash
-        |FROM old_snap o FULL OUTER JOIN new_snap n ON o.doc_id = n.doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "q116_emb_whiten" ->
-      """WITH el AS (
-        |  SELECT vec_id, CAST(pos AS BIGINT) AS pos, CAST(v AS DOUBLE) AS x
-        |  FROM (SELECT vec_id, unnest(embedding) AS v,
-        |          generate_subscripts(embedding, 1) AS pos
-        |        FROM embeddings) u
-        |), st AS (
-        |  SELECT pos,
-        |    CAST(SUM(CAST(x AS DECIMAL(38,20))) AS DOUBLE) / COUNT(*)
-        |      AS mean,
-        |    CAST(SUM(CAST(x * x AS DECIMAL(38,20))) AS DOUBLE) / COUNT(*)
-        |      AS ex2
-        |  FROM el GROUP BY pos
-        |), s2 AS (
-        |  SELECT pos, mean, sqrt(ex2 - mean * mean) AS std FROM st
-        |)
-        |SELECT el.vec_id, el.pos,
-        |  CASE WHEN s2.std = 0 THEN 0.0
-        |       ELSE round((el.x - s2.mean) / s2.std, 9) END AS z
-        |FROM el JOIN s2 USING (pos)
-        |ORDER BY vec_id, pos""".stripMargin,
-
-    "q117_token_drift" ->
-      s"""WITH tk AS (
-         |  SELECT CASE WHEN source IN ('src0','src1','src2','src3','src4',
-         |      'src5','src6','src7','src8','src9') THEN 1 ELSE 0 END
-         |      AS in_a,
-         |    unnest($toksSql) AS token
-         |  FROM documents
-         |), cnt AS (
-         |  SELECT token, CAST(SUM(in_a) AS BIGINT) AS n_a,
-         |    CAST(SUM(1 - in_a) AS BIGINT) AS n_b
-         |  FROM tk GROUP BY token
-         |), tot AS (
-         |  SELECT CAST(SUM(n_a) AS BIGINT) AS na,
-         |    CAST(SUM(n_b) AS BIGINT) AS nb, COUNT(*) AS v FROM cnt
-         |)
-         |SELECT token, n_a, n_b,
-         |  round((CAST(n_a + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
-         |    * ln((CAST(n_a + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
-         |        / (CAST(n_b + 1 AS DOUBLE) / CAST(nb + v AS DOUBLE))),
-         |    6) AS kl_term
-         |FROM cnt, tot
-         |WHERE n_a + n_b >= 10
-         |ORDER BY token""".stripMargin,
-
-    "q118_video_neardup" ->
-      """WITH m AS (
-        |  SELECT greatest(COUNT(*) // 20, 1) AS ng FROM documents
-        |), ids AS (
-        |  SELECT doc_id FROM documents WHERE doc_id % 100 <> 99
-        |), bits AS (
-        |  SELECT doc_id, CAST(j AS BIGINT) AS j,
-        |    CAST((
-        |      ((doc_id % ng) % (53 + j)) % 2
-        |      + CASE WHEN ((doc_id // ng) % 3) >= 1
-        |          AND j = (doc_id * 13) % 64 THEN 1 ELSE 0 END
-        |      + CASE WHEN ((doc_id // ng) % 3) = 2
-        |          AND j = (doc_id * 29 + 7) % 64 THEN 1 ELSE 0 END
-        |    ) % 2 AS BIGINT) AS bit
-        |  FROM ids, m, unnest(range(0, 64)) AS t(j)
-        |), blocks AS (
-        |  SELECT doc_id, j // 16 AS b, SUM(bit << (15 - (j % 16))) AS v
-        |  FROM bits GROUP BY doc_id, j // 16
-        |), cand AS (
-        |  SELECT DISTINCT l.doc_id AS a_id, r.doc_id AS b_id
-        |  FROM blocks l JOIN blocks r
-        |    ON l.b = r.b AND l.v = r.v AND l.doc_id < r.doc_id
-        |), ham AS (
-        |  SELECT c.a_id, c.b_id,
-        |    CAST(SUM(CASE WHEN ba.bit <> bb.bit THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS hamming
-        |  FROM cand c
-        |  JOIN bits ba ON ba.doc_id = c.a_id
-        |  JOIN bits bb ON bb.doc_id = c.b_id AND bb.j = ba.j
-        |  GROUP BY c.a_id, c.b_id
-        |)
-        |SELECT a_id, b_id, hamming FROM ham WHERE hamming <= 3
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q119_salted_join" ->
-      """WITH dim AS (
-        |  SELECT user_id, COUNT(*) AS n_events FROM events GROUP BY user_id
-        |)
-        |SELECT e.user_id, d.n_events, COUNT(*) AS n_joined,
-        |  CAST(SUM(CAST(e.value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-        |FROM events e JOIN dim d ON e.user_id = d.user_id
-        |GROUP BY e.user_id, d.n_events
-        |ORDER BY e.user_id""".stripMargin,
-
-    "q120_domain_stats" ->
-      """SELECT 'site' || CAST((doc_id // 4) % 20 AS VARCHAR)
-        |    || '.example.com' AS domain,
-        |  COUNT(*) AS n_pages,
-        |  CAST(COUNT(DISTINCT doc_id // 4) AS BIGINT) AS n_canonical,
-        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
-        |FROM documents
-        |GROUP BY 1 ORDER BY domain""".stripMargin,
-
-    "q121_winsorized_mean" ->
-      """WITH fences AS (
-        |  SELECT event_type,
-        |    quantile_cont(value, 0.05) AS lo,
-        |    quantile_cont(value, 0.95) AS hi
-        |  FROM events GROUP BY event_type
-        |)
-        |SELECT e.event_type, COUNT(*) AS n,
-        |  round(CAST(SUM(CAST(
-        |      least(greatest(e.value, f.lo), f.hi) AS DECIMAL(38,6)))
-        |    AS DOUBLE) / COUNT(*), 9) AS winsorized_mean
-        |FROM events e JOIN fences f USING (event_type)
-        |GROUP BY e.event_type
-        |ORDER BY e.event_type""".stripMargin,
-
-    "q122_temporal_split" ->
-      """WITH tagged AS (
-        |  SELECT user_id,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-22 00:00:00'
-        |      THEN 'train' ELSE 'test' END AS split
-        |  FROM events
-        |), us AS (
-        |  SELECT user_id,
-        |    bool_or(split = 'train') AS in_tr,
-        |    bool_or(split = 'test') AS in_te
-        |  FROM tagged GROUP BY user_id
-        |)
-        |SELECT t.split, COUNT(*) AS n_events,
-        |  CAST(COUNT(DISTINCT t.user_id) AS BIGINT) AS n_users,
-        |  CAST(SUM(CASE WHEN NOT (u.in_tr AND u.in_te) THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_clean_events
-        |FROM tagged t JOIN us u USING (user_id)
-        |GROUP BY t.split ORDER BY t.split""".stripMargin,
-
-    "q123_kmv_overlap" ->
-      """WITH tk AS (
-        |  SELECT lang,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT lang, CASE WHEN len(raw) < 3 THEN [array_to_string(raw, ' ')]
-        |    ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |          for i in range(0, len(raw) - 2)] END AS shingles
-        |  FROM tk
-        |), hs AS (
-        |  SELECT DISTINCT lang, md5(s) AS h
-        |  FROM (SELECT lang, unnest(shingles) AS s FROM sh)
-        |), rk AS (
-        |  SELECT lang, h,
-        |    row_number() OVER (PARTITION BY lang ORDER BY h) AS rn
-        |  FROM hs
-        |), sk AS (
-        |  SELECT lang, list(h ORDER BY h) AS hs
-        |  FROM rk WHERE rn <= 256 GROUP BY lang
-        |), pairs AS (
-        |  SELECT a.lang AS slice_a, b.lang AS slice_b,
-        |    a.hs AS a_hs, b.hs AS b_hs
-        |  FROM sk a JOIN sk b ON a.lang < b.lang
-        |), m AS (
-        |  SELECT slice_a, slice_b, a_hs, b_hs,
-        |    list_sort(list_distinct(a_hs || b_hs))[1:256] AS merged
-        |  FROM pairs
-        |), c AS (
-        |  SELECT slice_a, slice_b, len(merged) AS l_used,
-        |    len([x for x in merged
-        |         if list_contains(a_hs, x) AND list_contains(b_hs, x)])
-        |      AS n_shared
-        |  FROM m
-        |)
-        |SELECT slice_a, slice_b,
-        |  CAST(l_used AS BIGINT) AS l_used,
-        |  CAST(n_shared AS BIGINT) AS n_shared,
-        |  round(CAST(n_shared AS DOUBLE) / l_used, 6) AS jaccard_est
-        |FROM c ORDER BY slice_a, slice_b""".stripMargin,
-
-    "q124_markov_chain" ->
-      """WITH seq AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    lead(event_type)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-        |  FROM events
-        |), c AS (
-        |  SELECT event_type AS prev_type, next_type, COUNT(*) AS n
-        |  FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2
-        |)
-        |SELECT prev_type, next_type, CAST(n AS BIGINT) AS n,
-        |  round(CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY prev_type), 6)
-        |    AS p
-        |FROM c ORDER BY prev_type, next_type""".stripMargin,
-
-    "q125_token_pmi" ->
-      """WITH tk AS (
-        |  SELECT
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), bg AS (
-        |  SELECT unnest(raw[1:len(raw)-1]) AS w1,
-        |         unnest(raw[2:len(raw)]) AS w2
-        |  FROM tk WHERE len(raw) >= 2
-        |), c AS (
-        |  SELECT w1, w2, COUNT(*) AS c_ab FROM bg GROUP BY 1, 2
-        |), ca AS (
-        |  SELECT w1, SUM(c_ab) AS c_a FROM c GROUP BY 1
-        |), cb AS (
-        |  SELECT w2, SUM(c_ab) AS c_b FROM c GROUP BY 1
-        |), n AS (
-        |  SELECT CAST(SUM(c_ab) AS DOUBLE) AS n_total FROM c
-        |)
-        |SELECT c.w1, c.w2, CAST(c_ab AS BIGINT) AS c_ab,
-        |  CAST(c_a AS BIGINT) AS c_a, CAST(c_b AS BIGINT) AS c_b,
-        |  round(ln((CAST(c_ab AS DOUBLE) * n_total) /
-        |    (CAST(c_a AS DOUBLE) * CAST(c_b AS DOUBLE))), 6) AS pmi
-        |FROM c
-        |JOIN ca USING (w1) JOIN cb USING (w2) CROSS JOIN n
-        |WHERE c_ab >= 5
-        |ORDER BY c.w1, c.w2""".stripMargin,
-
-    "q126_hll_mergeable" ->
-      """SELECT 'site' || CAST((doc_id // 4) % 20 AS VARCHAR)
-        |    || '.example.com' AS domain,
-        |  CAST(COUNT(DISTINCT doc_id // 4) AS BIGINT) AS exact_urls,
-        |  CAST(COUNT(DISTINCT doc_id % 2) AS BIGINT) AS n_batches,
-        |  TRUE AS within_tol
-        |FROM documents
-        |GROUP BY 1 ORDER BY domain""".stripMargin,
-
-    "q127_zorder_layout" ->
-      s"""WITH d AS (
-        |  SELECT user_id % 256 AS x, hour(ts) AS y FROM events
-        |), z AS (
-        |  SELECT x, y, ${operators.Layout.zorderSql("x", "y", 8)} AS z
-        |  FROM d
-        |)
-        |SELECT z >> 12 AS shard, COUNT(*) AS n_rows,
-        |  MIN(x) AS x_min, MAX(x) AS x_max,
-        |  MIN(y) AS y_min, MAX(y) AS y_max
-        |FROM z GROUP BY 1 ORDER BY shard""".stripMargin,
-
-    "q128_ivfpq_append" ->
-      """SELECT vec_id AS query_id, CAST(10 AS BIGINT) AS n_results,
-        |  TRUE AS recall_floor_ok
-        |FROM embeddings WHERE vec_id < 30 ORDER BY query_id""".stripMargin,
-
-    "q129_integrity_audit" ->
-      """SELECT * FROM (
-        |  SELECT 1 AS check_idx, 'lineitem.l_orderkey->orders' AS fk_edge,
-        |    COUNT(*) AS n_child_rows,
-        |    CAST(SUM(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_orphans,
-        |    SUM(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END) = 0 AS ok
-        |  FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  UNION ALL
-        |  SELECT 2, 'orders.o_custkey->customer', COUNT(*),
-        |    CAST(SUM(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT),
-        |    SUM(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END) = 0
-        |  FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        |  UNION ALL
-        |  SELECT 3, 'customer.c_nationkey->nation', COUNT(*),
-        |    CAST(SUM(CASE WHEN n.n_nationkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT),
-        |    SUM(CASE WHEN n.n_nationkey IS NULL THEN 1 ELSE 0 END) = 0
-        |  FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  UNION ALL
-        |  SELECT 4, 'supplier.s_nationkey->nation', COUNT(*),
-        |    CAST(SUM(CASE WHEN n.n_nationkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT),
-        |    SUM(CASE WHEN n.n_nationkey IS NULL THEN 1 ELSE 0 END) = 0
-        |  FROM supplier s LEFT JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |) ORDER BY check_idx""".stripMargin,
-
-    "q130_k_anonymity" ->
-      """WITH tuples AS (
-        |  SELECT event_type, hour(ts) AS hb,
-        |    CAST(floor(value / 10.0) AS BIGINT) AS vb, COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2, 3
-        |)
-        |SELECT event_type, COUNT(*) AS n_tuples,
-        |  CAST(SUM(CASE WHEN n < 5 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_risky_tuples,
-        |  CAST(SUM(CASE WHEN n < 5 THEN n ELSE 0 END) AS BIGINT)
-        |    AS n_risky_rows
-        |FROM tuples GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q131_mad_outliers" ->
-      """WITH med AS (
-        |  SELECT event_type, quantile_cont(value, 0.5) AS med
-        |  FROM events GROUP BY event_type
-        |), dev AS (
-        |  SELECT e.event_type, e.value, m.med,
-        |    abs(e.value - m.med) AS adev
-        |  FROM events e JOIN med m USING (event_type)
-        |), mad AS (
-        |  SELECT event_type, quantile_cont(adev, 0.5) AS mad
-        |  FROM dev GROUP BY event_type
-        |)
-        |SELECT d.event_type, COUNT(*) AS n,
-        |  round(MAX(d.med), 9) AS med, round(MAX(a.mad), 9) AS mad,
-        |  CAST(SUM(CASE WHEN abs(d.value - d.med) > 3.5 * a.mad
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM dev d JOIN mad a USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
-
-    "q132_event_paths" ->
-      """WITH seq AS (
-        |  SELECT event_type AS e1,
-        |    lead(event_type, 1)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS e2,
-        |    lead(event_type, 2)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS e3
-        |  FROM events
-        |)
-        |SELECT e1, e2, e3, COUNT(*) AS n
-        |FROM seq WHERE e3 IS NOT NULL
-        |GROUP BY 1, 2, 3 HAVING COUNT(*) >= 10
-        |ORDER BY n DESC, e1, e2, e3""".stripMargin,
-
-    "q133_html_extract" ->
-      """WITH h AS (
-        |  SELECT doc_id, text,
-        |    '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
-        |    '</title><style>p{color:red}</style></head><body>' ||
-        |    '<nav><a href="/">home</a> <a href="/about">about</a></nav>' ||
-        |    '<div id="main"><p>' || text ||
-        |    '</p></div><footer>(c) 2024 example</footer>' ||
-        |    '<script>var x=1;</script></body></html>' AS html
-        |  FROM documents
-        |), x AS (
-        |  SELECT doc_id, text,
-        |    regexp_extract(html, '(?s)<title>(.*?)</title>', 1) AS title,
-        |    array_to_string(
-        |      regexp_extract_all(html, '(?s)<p>(.*?)</p>', 1), ' ') AS main,
-        |    trim(regexp_replace(regexp_replace(regexp_replace(
-        |      regexp_replace(html,
-        |      '(?s)<script[^>]*>.*?</script>', ' ', 'g'),
-        |      '(?s)<style[^>]*>.*?</style>', ' ', 'g'),
-        |      '<[^>]*>', ' ', 'g'), '\s+', ' ', 'g')) AS full_text
-        |  FROM h
-        |)
-        |SELECT doc_id, title, main = text AS recovered,
-        |  CAST(length(main) AS BIGINT) AS main_len,
-        |  CAST(length(full_text) AS BIGINT) AS full_len
-        |FROM x ORDER BY doc_id""".stripMargin,
-
-    "q134_domain_prior" ->
-      """WITH d AS (
-        |  SELECT 'site' || CAST((doc_id // 4) % 20 AS VARCHAR)
-        |      || '.example.com' AS domain,
-        |    n_chars
-        |  FROM documents
-        |), per AS (
-        |  SELECT domain, COUNT(*) AS n_docs,
-        |    SUM(CAST(n_chars AS DECIMAL(38,6))) AS s
-        |  FROM d GROUP BY domain
-        |), g AS (
-        |  SELECT CAST(SUM(CAST(n_chars AS DECIMAL(38,6))) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE) AS mean_g FROM d
-        |)
-        |SELECT domain, n_docs,
-        |  round(CAST(s AS DOUBLE) / CAST(n_docs AS DOUBLE), 6) AS mean_chars,
-        |  round((CAST(n_docs AS DOUBLE)
-        |      * (CAST(s AS DOUBLE) / CAST(n_docs AS DOUBLE))
-        |    + 20.0 * mean_g) / (CAST(n_docs AS DOUBLE) + 20.0), 6)
-        |    AS mean_shrunk
-        |FROM per CROSS JOIN g ORDER BY domain""".stripMargin,
-
-    "q135_group_topk" ->
-      """SELECT source, doc_id, CAST(n_chars AS DOUBLE) AS score,
-        |  CAST(rk AS INTEGER) AS rk
-        |FROM (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY n_chars DESC, doc_id ASC) AS rk
-        |  FROM documents
-        |)
-        |WHERE rk <= 3 ORDER BY source, rk""".stripMargin,
-
-    "q136_window_zoo" ->
-      """SELECT user_id, event_id,
-        |  CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-        |  round(percent_rank() OVER w, 9) AS prank,
-        |  round(cume_dist() OVER w, 9) AS cdist,
-        |  lag(value, 1, -1.0) OVER w AS prev_value,
-        |  first_value(event_id) OVER wr AS first_id,
-        |  last_value(event_id) OVER wr AS last_id_so_far
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
-        |  wr AS (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q137_setops_all" ->
-      """WITH a AS (
-        |  SELECT event_type FROM events WHERE event_id % 2 = 0
-        |), b AS (
-        |  SELECT event_type FROM events WHERE event_id % 2 = 1
-        |)
-        |SELECT * FROM (
-        |  SELECT 'intersect_all' AS op, event_type, COUNT(*) AS n
-        |  FROM (SELECT * FROM a INTERSECT ALL SELECT * FROM b)
-        |  GROUP BY 2
-        |  UNION ALL
-        |  SELECT 'except_all', event_type, COUNT(*)
-        |  FROM (SELECT * FROM a EXCEPT ALL SELECT * FROM b)
-        |  GROUP BY 2
-        |) ORDER BY op, event_type""".stripMargin,
-
-    "q138_bm25" -> bm25Sql("'spark', 'join', 'window'", 20),
-
-    "q139_sparse_cosine" ->
-      """WITH raws AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id, CASE WHEN len(raw) < 4
-        |    THEN [array_to_string(raw, ' ')]
-        |    ELSE [array_to_string(raw[i+1:i+4], ' ')
-        |          for i in range(0, len(raw) - 3)] END AS grams
-        |  FROM raws
-        |), tf AS (
-        |  SELECT doc_id, t, CAST(COUNT(*) AS DOUBLE) AS tf
-        |  FROM (SELECT doc_id, unnest(grams) AS t FROM sh)
-        |  GROUP BY 1, 2
-        |), kept AS (
-        |  SELECT tf.* FROM tf JOIN (
-        |    SELECT t FROM tf GROUP BY 1 HAVING COUNT(*) <= 1000) d USING (t)
-        |), nrm AS (
-        |  SELECT doc_id,
-        |    sqrt(CAST(SUM(CAST(tf * tf AS DECIMAL(38,20))) AS DOUBLE)) AS nrm
-        |  FROM kept GROUP BY 1
-        |), w AS (
-        |  SELECT t, kept.doc_id, tf / nrm AS w
-        |  FROM kept JOIN nrm USING (doc_id)
-        |)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CAST(COUNT(*) AS BIGINT) AS n_shared,
-        |  round(CAST(SUM(CAST(a.w * b.w AS DECIMAL(38,20))) AS DOUBLE), 6)
-        |    AS sim
-        |FROM w a JOIN w b ON a.t = b.t AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2
-        |HAVING round(CAST(SUM(CAST(a.w * b.w AS DECIMAL(38,20))) AS DOUBLE),
-        |    6) >= 0.3
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q140_rrf_fusion" ->
-      s"""WITH lex AS (
-        |  SELECT doc_id, rk FROM (${bm25Sql("'merge', 'sort', 'hash'", 30)})
-        |), dense AS (
-        |  SELECT doc_id, rk FROM (
-        |    WITH q AS (
-        |      SELECT embedding AS qv FROM embeddings WHERE vec_id = 0
-        |    ), c AS (
-        |      SELECT vec_id AS cid, embedding AS cv FROM embeddings
-        |      WHERE vec_id <> 0
-        |    ), p AS (
-        |      SELECT cid,
-        |        list_sum(list_transform(list_zip(qv, cv),
-        |          z -> CAST(CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)
-        |            AS DECIMAL(38,20)))) AS dot,
-        |        list_sum(list_transform(qv,
-        |          x -> CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |            AS DECIMAL(38,20)))) AS nq,
-        |        list_sum(list_transform(cv,
-        |          x -> CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |            AS DECIMAL(38,20)))) AS nc
-        |      FROM q, c
-        |    ), scored AS (
-        |      SELECT cid AS doc_id,
-        |        round(CASE WHEN nq = 0 OR nc = 0 THEN 0.0
-        |          ELSE CAST(dot AS DOUBLE)
-        |            / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(nc AS DOUBLE)))
-        |          END, 6) AS sim
-        |      FROM p)
-        |    SELECT doc_id,
-        |      CAST(ROW_NUMBER() OVER (ORDER BY sim DESC, doc_id) AS INT)
-        |        AS rk
-        |    FROM scored ORDER BY sim DESC, doc_id LIMIT 30)
-        |), u AS (
-        |  SELECT doc_id,
-        |    CAST(1.0 / (60.0 + CAST(rk AS DOUBLE)) AS DECIMAL(38,20)) AS s
-        |  FROM lex
-        |  UNION ALL
-        |  SELECT doc_id,
-        |    CAST(1.0 / (60.0 + CAST(rk AS DOUBLE)) AS DECIMAL(38,20)) AS s
-        |  FROM dense
-        |), agg AS (
-        |  SELECT doc_id, CAST(COUNT(*) AS INTEGER) AS n_lists,
-        |    round(CAST(SUM(s) AS DOUBLE), 9) AS score
-        |  FROM u GROUP BY 1
-        |)
-        |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-        |    AS INTEGER) AS rk,
-        |  doc_id, n_lists, score
-        |FROM agg ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
-
-    "q141_edit_join" ->
-      """WITH f AS (
-        |  SELECT doc_id AS id,
-        |    CASE CAST(doc_id % 5 AS INTEGER)
-        |      WHEN 0 THEN base
-        |      WHEN 1 THEN substring(base, 1, pos - 1) || 'z'
-        |        || substring(base, pos + 1, 12)
-        |      WHEN 2 THEN substring(base, 1, 11)
-        |      WHEN 3 THEN base || 'q'
-        |      ELSE 'zz' || substring(base, 3, 10) END AS str
-        |  FROM (
-        |    SELECT doc_id,
-        |      substring(md5(CAST(CAST(floor(doc_id / 10) AS BIGINT)
-        |        AS VARCHAR)), 1, 12) AS base,
-        |      CAST(doc_id % 7 + 2 AS INTEGER) AS pos
-        |    FROM documents)
-        |)
-        |SELECT a.id AS a_id, b.id AS b_id,
-        |  CAST(levenshtein(a.str, b.str) AS INTEGER) AS dist
-        |FROM f a JOIN f b ON a.id < b.id
-        |WHERE abs(len(a.str) - len(b.str)) <= 1
-        |  AND levenshtein(a.str, b.str) <= 1
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q142_emb_outliers" ->
-      """WITH el AS (
-        |  SELECT vec_id, pos, CAST(v AS DOUBLE) AS x
-        |  FROM (SELECT vec_id, unnest(embedding) AS v,
-        |          generate_subscripts(embedding, 1) AS pos
-        |        FROM embeddings) u
-        |), centroid AS (
-        |  SELECT pos,
-        |    round(CAST(SUM(CAST(x AS DECIMAL(38,20))) AS DOUBLE)
-        |      / COUNT(*), 9) AS c
-        |  FROM el GROUP BY pos
-        |), dist AS (
-        |  SELECT vec_id,
-        |    round(sqrt(CAST(SUM(CAST((x - c) * (x - c) AS DECIMAL(38,20)))
-        |      AS DOUBLE)), 6) AS dist
-        |  FROM el JOIN centroid USING (pos)
-        |  GROUP BY vec_id
-        |), fence AS (
-        |  SELECT quantile_cont(dist, 0.99) AS fence FROM dist
-        |)
-        |SELECT vec_id, dist, round(fence, 6) AS fence
-        |FROM dist CROSS JOIN fence
-        |WHERE dist > fence
-        |ORDER BY vec_id""".stripMargin,
-
-    "q143_weighted_sample" ->
-      """WITH sc AS (
-        |  SELECT lang, doc_id,
-        |    round(ln(CAST(n_chars AS DOUBLE)) - ln(-ln(
-        |      (CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |        (strpos('0123456789abcdef',
-        |          substr(md5(CAST(doc_id AS VARCHAR)), i + 1, 1)) - 1)
-        |        for i in range(0, 8)]) AS DOUBLE) + 1.0) / 4294967297.0)),
-        |      6) AS score
-        |  FROM documents
-        |)
-        |SELECT lang, doc_id, score, CAST(rk AS INTEGER) AS rk FROM (
-        |  SELECT lang, doc_id, score,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY score DESC, doc_id ASC) AS rk
-        |  FROM sc)
-        |WHERE rk <= 25 ORDER BY lang, rk""".stripMargin,
-
-    "q144_retrieval_eval" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, embedding AS qv, label AS ql
-        |  FROM embeddings WHERE vec_id < 8
-        |), c AS (
-        |  SELECT vec_id AS cid, embedding AS cv, label FROM embeddings
-        |), p AS (
-        |  SELECT qid, cid,
-        |    list_sum(list_transform(list_zip(qv, cv),
-        |      z -> CAST(CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)
-        |        AS DECIMAL(38,20)))) AS dot,
-        |    list_sum(list_transform(qv,
-        |      x -> CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |        AS DECIMAL(38,20)))) AS nq,
-        |    list_sum(list_transform(cv,
-        |      x -> CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-        |        AS DECIMAL(38,20)))) AS nc
-        |  FROM q, c WHERE qid <> cid
-        |), scored AS (
-        |  SELECT qid AS query_id, cid AS doc_id,
-        |    round(CASE WHEN nq = 0 OR nc = 0 THEN 0.0
-        |      ELSE CAST(dot AS DOUBLE)
-        |        / (sqrt(CAST(nq AS DOUBLE)) * sqrt(CAST(nc AS DOUBLE)))
-        |      END, 6) AS sim
-        |  FROM p
-        |), run AS (
-        |  SELECT query_id, doc_id, rk FROM (
-        |    SELECT query_id, doc_id,
-        |      CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |        ORDER BY sim DESC, doc_id) AS INT) AS rk
-        |    FROM scored)
-        |  WHERE rk <= 10
-        |), qrels AS (
-        |  SELECT q.qid AS query_id, c.cid AS doc_id,
-        |    CAST(1.0 AS DOUBLE) AS rel
-        |  FROM q JOIN c ON q.ql = c.label AND q.qid <> c.cid
-        |), hits AS (
-        |  SELECT query_id, CAST(count(*) AS BIGINT) AS n_hits,
-        |    CAST(SUM(CAST(rel / (ln(CAST(rk AS DOUBLE) + 1.0) / ln(2.0))
-        |      AS DECIMAL(38,20))) AS DOUBLE) AS dcg,
-        |    min(CASE WHEN rel > 0 THEN rk END) AS first_rel
-        |  FROM run JOIN qrels USING (query_id, doc_id)
-        |  GROUP BY 1
-        |), ideal AS (
-        |  SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel,
-        |    CAST(list_sum(list_transform(
-        |      list_slice(list_sort(list(CAST(rel AS DOUBLE)), 'DESC'),
-        |        1, 10),
-        |      (r, i) -> CAST(r / (ln(CAST(i AS DOUBLE) + 1.0) / ln(2.0))
-        |        AS DECIMAL(38,20)))) AS DOUBLE) AS idcg
-        |  FROM qrels GROUP BY 1
-        |)
-        |SELECT i.query_id, i.n_rel, coalesce(h.n_hits, 0) AS n_hits,
-        |  round(CAST(coalesce(h.n_hits, 0) AS DOUBLE)
-        |    / CAST(i.n_rel AS DOUBLE), 6) AS recall,
-        |  round(coalesce(1.0 / CAST(h.first_rel AS DOUBLE), 0.0), 6)
-        |    AS mrr,
-        |  round(coalesce(h.dcg, 0.0) / i.idcg, 6) AS ndcg
-        |FROM ideal i LEFT JOIN hits h USING (query_id)
-        |ORDER BY query_id""".stripMargin,
-
-    "q145_triangles" ->
-      """WITH e AS (
-        |  SELECT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), deg AS (
-        |  SELECT n, count(*) AS d
-        |  FROM (SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
-        |  GROUP BY 1
-        |), tri AS (
-        |  SELECT count(*) AS t
-        |  FROM e e1 JOIN e e2 ON e1.v = e2.u
-        |    JOIN e e3 ON e1.u = e3.u AND e2.v = e3.v
-        |), s AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-        |    CAST(SUM(d) // 2 AS BIGINT) AS n_edges,
-        |    CAST(SUM(d * (d - 1) // 2) AS BIGINT) AS n_wedges
-        |  FROM deg
-        |)
-        |SELECT n_nodes, n_edges, n_wedges,
-        |  CAST(t AS BIGINT) AS n_triangles,
-        |  round(3.0 * CAST(t AS DOUBLE) / CAST(n_wedges AS DOUBLE), 6)
-        |    AS global_cc
-        |FROM s, tri""".stripMargin,
-
-    "q146_gapfill" ->
-      """WITH base AS (
-        |  SELECT event_type AS key, date_trunc('hour', ts) AS hour,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    round(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)
-        |      / CAST(count(*) AS DOUBLE), 6) AS v
-        |  FROM events GROUP BY 1, 2
-        |), spine AS (
-        |  SELECT key,
-        |    unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-        |  FROM (SELECT key, min(hour) AS h0, max(hour) AS h1
-        |        FROM base GROUP BY 1)
-        |), j AS (
-        |  SELECT s.key, s.hour, b.n, b.v
-        |  FROM spine s LEFT JOIN base b USING (key, hour)
-        |), w AS (
-        |  SELECT key, hour, n, v,
-        |    last_value(v IGNORE NULLS) OVER (PARTITION BY key
-        |      ORDER BY hour
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-        |    last_value(CASE WHEN v IS NOT NULL THEN hour END IGNORE NULLS)
-        |      OVER (PARTITION BY key ORDER BY hour
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ph,
-        |    first_value(v IGNORE NULLS) OVER (PARTITION BY key
-        |      ORDER BY hour
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN hour END IGNORE NULLS)
-        |      OVER (PARTITION BY key ORDER BY hour
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nh
-        |  FROM j
-        |)
-        |SELECT key, hour, coalesce(n, 0) AS n,
-        |  CASE WHEN v IS NOT NULL THEN v
-        |    ELSE round(pv + (nv - pv) * (epoch(hour) - epoch(ph))
-        |      / (epoch(nh) - epoch(ph)), 6) END AS level,
-        |  (v IS NULL) AS filled
-        |FROM w ORDER BY key, hour""".stripMargin,
-
-    "q147_ab_test" ->
-      """WITH units AS (
-        |  SELECT user_id,
-        |    max(CASE WHEN event_type = 'purchase' AND value >= 200
-        |      THEN 1 ELSE 0 END) AS converted,
-        |    CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |      THEN 'A' ELSE 'B' END AS arm
-        |  FROM events GROUP BY 1
-        |), a AS (
-        |  SELECT
-        |    CAST(SUM(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_a,
-        |    CAST(SUM(CASE WHEN arm <> 'A' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_b,
-        |    CAST(SUM(CASE WHEN arm = 'A' THEN converted ELSE 0 END)
-        |      AS BIGINT) AS conv_a,
-        |    CAST(SUM(CASE WHEN arm <> 'A' THEN converted ELSE 0 END)
-        |      AS BIGINT) AS conv_b
-        |  FROM units
-        |)
-        |SELECT n_a, n_b, conv_a, conv_b,
-        |  round(CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6) AS p_a,
-        |  round(CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6) AS p_b,
-        |  round((CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-        |      - CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-        |    / sqrt(CAST(conv_a + conv_b AS DOUBLE)
-        |        / CAST(n_a + n_b AS DOUBLE)
-        |      * (1.0 - CAST(conv_a + conv_b AS DOUBLE)
-        |        / CAST(n_a + n_b AS DOUBLE))
-        |      * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))),
-        |    6) AS z
-        |FROM a""".stripMargin,
-
-    "q148_profile" ->
-      """SELECT * FROM (
-        |  SELECT 'o_orderkey' AS col_name, count(*) AS n_rows,
-        |    CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_null,
-        |    CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_distinct,
-        |    CAST(min(o_orderkey) AS VARCHAR) AS min_s,
-        |    CAST(max(o_orderkey) AS VARCHAR) AS max_s
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_custkey', count(*),
-        |    CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT),
-        |    CAST(count(DISTINCT o_custkey) AS BIGINT),
-        |    CAST(min(o_custkey) AS VARCHAR),
-        |    CAST(max(o_custkey) AS VARCHAR)
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', count(*),
-        |    CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT),
-        |    CAST(count(DISTINCT o_orderstatus) AS BIGINT),
-        |    min(o_orderstatus), max(o_orderstatus)
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_totalprice', count(*),
-        |    CAST(SUM(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT),
-        |    CAST(count(DISTINCT o_totalprice) AS BIGINT),
-        |    CAST(CAST(round(min(o_totalprice), 2) AS DECIMAL(18,2))
-        |      AS VARCHAR),
-        |    CAST(CAST(round(max(o_totalprice), 2) AS DECIMAL(18,2))
-        |      AS VARCHAR)
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderdate', count(*),
-        |    CAST(SUM(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT),
-        |    CAST(count(DISTINCT o_orderdate) AS BIGINT),
-        |    strftime(min(o_orderdate), '%Y-%m-%d %H:%M:%S'),
-        |    strftime(max(o_orderdate), '%Y-%m-%d %H:%M:%S')
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderpriority', count(*),
-        |    CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT),
-        |    CAST(count(DISTINCT o_orderpriority) AS BIGINT),
-        |    min(o_orderpriority), max(o_orderpriority)
-        |  FROM orders
-        |) ORDER BY col_name""".stripMargin,
-
-    "q149_scd2" ->
-      """WITH m AS (
-        |  SELECT user_id, event_type AS state, ts, event_id,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev_state
-        |  FROM events
-        |), ch AS (
-        |  SELECT user_id, state, ts AS valid_from, event_id
-        |  FROM m WHERE prev_state IS NULL OR prev_state <> state
-        |)
-        |SELECT user_id, state, valid_from,
-        |  lead(valid_from) OVER (PARTITION BY user_id
-        |    ORDER BY valid_from, event_id) AS valid_to,
-        |  (lead(valid_from) OVER (PARTITION BY user_id
-        |    ORDER BY valid_from, event_id) IS NULL) AS is_current,
-        |  CAST(row_number() OVER (PARTITION BY user_id
-        |    ORDER BY valid_from, event_id) AS INT) AS version
-        |FROM ch ORDER BY user_id, version""".stripMargin,
-
-    "q150_containment" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id, t FROM (
-        |    SELECT doc_id,
-        |      unnest(CASE WHEN len(raw) < 3
-        |        THEN [array_to_string(raw, ' ')]
-        |        ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |              for i in range(0, len(raw) - 2)] END) AS t
-        |    FROM tk)
-        |), kept AS (
-        |  SELECT sh.doc_id, sh.t FROM sh
-        |  JOIN (SELECT t FROM sh GROUP BY t HAVING count(*) <= 50) f
-        |    USING (t)
-        |), sz AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-        |  FROM kept GROUP BY 1
-        |), shared AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    CAST(count(*) AS BIGINT) AS n_shared
-        |  FROM kept a JOIN kept b ON a.t = b.t AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2
-        |)
-        |SELECT a_id, b_id, n_shared,
-        |  round(CAST(n_shared AS DOUBLE) / CAST(sz AS DOUBLE), 6)
-        |    AS containment
-        |FROM shared JOIN sz ON sz.doc_id = shared.a_id
-        |WHERE round(CAST(n_shared AS DOUBLE) / CAST(sz AS DOUBLE), 6)
-        |  >= 0.8
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q151_silhouette" ->
-      """WITH el AS (
-        |  SELECT vec_id, plabel, pos, CAST(v AS DOUBLE) AS x
-        |  FROM (SELECT vec_id, label AS plabel, unnest(embedding) AS v,
-        |          generate_subscripts(embedding, 1) AS pos
-        |        FROM embeddings) u
-        |), cent AS (
-        |  SELECT plabel AS clabel, pos,
-        |    round(CAST(SUM(CAST(x AS DECIMAL(38,20))) AS DOUBLE)
-        |      / COUNT(*), 9) AS c
-        |  FROM el GROUP BY 1, 2
-        |), dist AS (
-        |  SELECT e.vec_id, e.plabel, c.clabel,
-        |    round(sqrt(CAST(SUM(CAST((x - c) * (x - c) AS DECIMAL(38,20)))
-        |      AS DOUBLE)), 6) AS d
-        |  FROM el e JOIN cent c USING (pos)
-        |  GROUP BY 1, 2, 3
-        |), ab AS (
-        |  SELECT vec_id, plabel,
-        |    max(CASE WHEN clabel = plabel THEN d END) AS a,
-        |    min(CASE WHEN clabel <> plabel THEN d END) AS b
-        |  FROM dist GROUP BY 1, 2
-        |), s AS (
-        |  SELECT plabel, CASE WHEN greatest(a, b) = 0 THEN 0.0
-        |    ELSE round((b - a) / greatest(a, b), 6) END AS s
-        |  FROM ab
-        |)
-        |SELECT plabel AS label, CAST(count(*) AS BIGINT) AS n,
-        |  round(CAST(SUM(CAST(s AS DECIMAL(38,6))) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE), 6) AS mean_sil
-        |FROM s GROUP BY 1 ORDER BY label""".stripMargin,
-
-    "q152_histogram" ->
-      """WITH a AS (
-        |  SELECT
-        |    quantile_cont(l_quantity,
-        |      [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS q1,
-        |    quantile_cont(l_extendedprice,
-        |      [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS q2,
-        |    quantile_cont(l_discount,
-        |      [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS q3
-        |  FROM lineitem
-        |)
-        |SELECT col_name, pct, boundary FROM (
-        |  SELECT 'l_quantity' AS col_name, CAST(10 * i AS INT) AS pct,
-        |    round(q1[i], 6) AS boundary
-        |  FROM a, range(1, 10) t(i)
-        |  UNION ALL
-        |  SELECT 'l_extendedprice', CAST(10 * i AS INT), round(q2[i], 6)
-        |  FROM a, range(1, 10) t(i)
-        |  UNION ALL
-        |  SELECT 'l_discount', CAST(10 * i AS INT), round(q3[i], 6)
-        |  FROM a, range(1, 10) t(i)
-        |) ORDER BY col_name, pct""".stripMargin,
-
-    "q153_kcore" -> kcoreSql(k = 3, rounds = 10),
-
-    "q154_label_prop" -> labelPropSql(rounds = 3),
-
-    "q155_ctfidf" ->
-      """WITH tf AS (
-        |  SELECT class, t, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT source AS class,
-        |          unnest(list_filter(regexp_split_to_array(text, '\s+'),
-        |            x -> x <> '')) AS t
-        |        FROM documents)
-        |  GROUP BY 1, 2
-        |), f AS (
-        |  SELECT t, SUM(tf) AS f FROM tf GROUP BY 1
-        |), a AS (
-        |  SELECT CAST(SUM(mass) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-        |    AS avg_mass
-        |  FROM (SELECT class, SUM(tf) AS mass FROM tf GROUP BY 1)
-        |), w AS (
-        |  SELECT class, t AS term, tf,
-        |    round(CAST(tf AS DOUBLE)
-        |      * ln(1.0 + avg_mass / CAST(f AS DOUBLE)), 6) AS w
-        |  FROM tf JOIN f USING (t) CROSS JOIN a
-        |)
-        |SELECT class, term, tf, w, CAST(rk AS INT) AS rk FROM (
-        |  SELECT class, term, tf, w,
-        |    row_number() OVER (PARTITION BY class
-        |      ORDER BY w DESC, term) AS rk
-        |  FROM w)
-        |WHERE rk <= 5 ORDER BY class, rk""".stripMargin,
-
-    "q156_psi_drift" ->
-      """WITH ref AS (
-        |  SELECT value FROM events
-        |  WHERE ts < TIMESTAMP '2024-01-16 00:00:00'
-        |), cur AS (
-        |  SELECT value FROM events
-        |  WHERE ts >= TIMESTAMP '2024-01-16 00:00:00'
-        |), bs AS (
-        |  SELECT list_transform(quantile_cont(value,
-        |    [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]),
-        |    b -> round(b, 6)) AS bs
-        |  FROM ref
-        |), rb AS (
-        |  SELECT bucket, CAST(count(*) AS BIGINT) AS n_ref
-        |  FROM (SELECT list_sum(list_transform(bs,
-        |          b -> CASE WHEN value > b THEN 1 ELSE 0 END)) AS bucket
-        |        FROM ref CROSS JOIN bs)
-        |  GROUP BY 1
-        |), cb AS (
-        |  SELECT bucket, CAST(count(*) AS BIGINT) AS n_cur
-        |  FROM (SELECT list_sum(list_transform(bs,
-        |          b -> CASE WHEN value > b THEN 1 ELSE 0 END)) AS bucket
-        |        FROM cur CROSS JOIN bs)
-        |  GROUP BY 1
-        |), spine AS (
-        |  SELECT i AS bucket FROM range(0, 10) t(i)
-        |), per AS (
-        |  SELECT bucket, coalesce(n_ref, 0) AS n_ref,
-        |    coalesce(n_cur, 0) AS n_cur
-        |  FROM spine LEFT JOIN rb USING (bucket)
-        |  LEFT JOIN cb USING (bucket)
-        |), tot AS (
-        |  SELECT SUM(n_ref) AS t_ref, SUM(n_cur) AS t_cur FROM per
-        |), sc AS (
-        |  SELECT bucket, n_ref, n_cur,
-        |    round(CAST(n_ref + 1 AS DOUBLE)
-        |      / CAST(t_ref + 10 AS DOUBLE), 9) AS p_ref,
-        |    round(CAST(n_cur + 1 AS DOUBLE)
-        |      / CAST(t_cur + 10 AS DOUBLE), 9) AS p_cur
-        |  FROM per CROSS JOIN tot
-        |), sc2 AS (
-        |  SELECT bucket, n_ref, n_cur, p_ref, p_cur,
-        |    round((p_cur - p_ref) * ln(p_cur / p_ref), 9) AS contrib
-        |  FROM sc
-        |), psi AS (
-        |  SELECT round(CAST(SUM(CAST(contrib AS DECIMAL(38,9)))
-        |    AS DOUBLE), 6) AS psi
-        |  FROM sc2
-        |)
-        |SELECT CAST(bucket AS INT) AS bucket, n_ref, n_cur,
-        |  p_ref, p_cur, contrib, psi
-        |FROM sc2 CROSS JOIN psi ORDER BY bucket""".stripMargin,
-
-    "q157_theilsen" ->
-      """WITH abs0 AS MATERIALIZED (
-        |  SELECT key, xa, CAST(count(*) AS BIGINT) AS y
-        |  FROM (SELECT event_type AS key,
-        |          CAST(epoch(date_trunc('hour', ts)) AS BIGINT) // 3600
-        |            AS xa
-        |        FROM events)
-        |  GROUP BY 1, 2
-        |), base AS MATERIALIZED (
-        |  SELECT a.key AS key, a.xa - m.x0 AS x, a.y AS y
-        |  FROM abs0 a JOIN (SELECT key, min(xa) AS x0 FROM abs0
-        |                    GROUP BY 1) m
-        |    ON a.key = m.key
-        |), slopes AS (
-        |  SELECT a.key,
-        |    round(CAST(b.y - a.y AS DOUBLE)
-        |      / CAST(b.x - a.x AS DOUBLE), 9) AS m
-        |  FROM base a JOIN base b ON a.key = b.key AND a.x < b.x
-        |), sl AS (
-        |  SELECT key, round(quantile_cont(m, 0.5), 6) AS slope
-        |  FROM slopes GROUP BY 1
-        |)
-        |SELECT base.key AS key, CAST(count(*) AS BIGINT) AS n_hours,
-        |  any_value(slope) AS slope,
-        |  round(quantile_cont(y - slope * x, 0.5), 6) AS intercept
-        |FROM base JOIN sl ON base.key = sl.key
-        |GROUP BY 1 ORDER BY key""".stripMargin,
-
-    "q158_seasonal" ->
-      """WITH base AS MATERIALIZED (
-        |  SELECT event_type AS key, date_trunc('hour', ts) AS hour,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2
-        |), b2 AS (
-        |  SELECT key, hour, n, CAST(hour(hour) AS INT) AS hod FROM base
-        |), prof AS (
-        |  SELECT key, hod, count(*) AS cnt, sum(n) AS s,
-        |    sum(n * n) AS ss
-        |  FROM b2 GROUP BY 1, 2
-        |), p2 AS (
-        |  SELECT key, hod,
-        |    round(CAST(s AS DOUBLE) / CAST(cnt AS DOUBLE), 9) AS mean_n,
-        |    round(sqrt((CAST(ss AS DOUBLE)
-        |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-        |        / CAST(cnt AS DOUBLE))
-        |      / CAST(cnt AS DOUBLE)), 6) AS sd_n
-        |  FROM prof
-        |)
-        |SELECT key, hour, n, hod, mean_n, sd_n,
-        |  round((CAST(n AS DOUBLE) - mean_n) / sd_n, 6) AS zscore
-        |FROM b2 JOIN p2 USING (key, hod)
-        |WHERE sd_n > 0
-        |  AND abs(CAST(n AS DOUBLE) - mean_n) > 3.0 * sd_n
-        |ORDER BY key, hour""".stripMargin,
-
-    "q159_cusum" ->
-      """WITH base AS MATERIALIZED (
-        |  SELECT event_type AS key, date_trunc('hour', ts) AS hour,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2
-        |), prof AS (
-        |  SELECT key, count(*) AS cnt, sum(n) AS s, sum(n * n) AS ss
-        |  FROM base GROUP BY 1
-        |), p2 AS (
-        |  SELECT key,
-        |    round(CAST(s AS DOUBLE) / CAST(cnt AS DOUBLE), 9) AS mean_n,
-        |    round(sqrt((CAST(ss AS DOUBLE)
-        |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-        |        / CAST(cnt AS DOUBLE))
-        |      / CAST(cnt AS DOUBLE)), 6) AS sd_n
-        |  FROM prof
-        |), z AS (
-        |  SELECT key, hour, n,
-        |    CAST(round((CAST(n AS DOUBLE) - mean_n) / sd_n, 6)
-        |      AS DECIMAL(38,6)) AS z
-        |  FROM base JOIN p2 USING (key) WHERE sd_n > 0
-        |), m AS (
-        |  SELECT key, hour, n, z,
-        |    sum(z - CAST(0.5 AS DECIMAL(38,6))) OVER w AS m_up,
-        |    sum(-z - CAST(0.5 AS DECIMAL(38,6))) OVER w AS m_dn
-        |  FROM z
-        |  WINDOW w AS (PARTITION BY key ORDER BY hour
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |), s AS (
-        |  SELECT key, hour, n, z,
-        |    m_up - least(min(m_up) OVER w, 0) AS s_plus,
-        |    m_dn - least(min(m_dn) OVER w, 0) AS s_minus
-        |  FROM m
-        |  WINDOW w AS (PARTITION BY key ORDER BY hour
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT key, hour, n, round(CAST(z AS DOUBLE), 6) AS z,
-        |  round(CAST(s_plus AS DOUBLE), 6) AS s_plus,
-        |  round(CAST(s_minus AS DOUBLE), 6) AS s_minus,
-        |  s_plus > 4.0 AS shift_up, s_minus > 4.0 AS shift_down
-        |FROM s ORDER BY key, hour""".stripMargin,
-
-    "q160_active_users" ->
-      """WITH ud AS MATERIALIZED (
-        |  SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day
-        |  FROM events
-        |), dau AS (
-        |  SELECT day, CAST(count(*) AS BIGINT) AS dau FROM ud GROUP BY 1
-        |), cov AS (
-        |  SELECT DISTINCT u, day + CAST(g.i AS INT) AS day
-        |  FROM ud, unnest(generate_series(0, 6)) AS g(i)
-        |), wau AS (
-        |  SELECT day, CAST(count(*) AS BIGINT) AS wau FROM cov GROUP BY 1
-        |)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, dau, wau,
-        |  round(CAST(dau AS DOUBLE) / CAST(wau AS DOUBLE), 6)
-        |    AS stickiness
-        |FROM dau JOIN wau USING (day)
-        |ORDER BY day""".stripMargin,
-
-    "q161_linkpred" ->
-      """WITH e AS MATERIALIZED (
-        |  SELECT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), adj AS MATERIALIZED (
-        |  SELECT u AS w, v AS nb FROM e
-        |  UNION ALL SELECT v, u FROM e
-        |), deg AS (
-        |  SELECT w, count(*) AS d FROM adj GROUP BY 1
-        |), centers AS MATERIALIZED (
-        |  SELECT adj.w, adj.nb,
-        |    CAST(round(1.0 / ln(CAST(d AS DOUBLE)), 9)
-        |      AS DECIMAL(38,9)) AS wt
-        |  FROM adj JOIN deg USING (w)
-        |  WHERE d <= 64 AND d >= 2
-        |), scored AS (
-        |  SELECT a.nb AS u, b.nb AS v,
-        |    round(CAST(sum(a.wt) AS DOUBLE), 6) AS score
-        |  FROM centers a JOIN centers b
-        |    ON a.w = b.w AND a.nb < b.nb
-        |  GROUP BY 1, 2
-        |)
-        |SELECT s.u, s.v, s.score FROM scored s
-        |LEFT JOIN e ON e.u = s.u AND e.v = s.v
-        |WHERE e.u IS NULL
-        |ORDER BY s.score DESC, s.u, s.v LIMIT 100""".stripMargin,
-
-    "q162_auc" ->
-      """WITH b AS (
-        |  SELECT round(CAST(embedding[1] AS DOUBLE), 6) AS s,
-        |    sum(CASE WHEN label % 2 = 0 THEN 1 ELSE 0 END) AS np,
-        |    sum(CASE WHEN label % 2 = 0 THEN 0 ELSE 1 END) AS nn
-        |  FROM embeddings GROUP BY 1
-        |), w AS (
-        |  SELECT np, nn,
-        |    coalesce(sum(nn) OVER (ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS below
-        |  FROM b
-        |)
-        |SELECT CAST(sum(np) AS BIGINT) AS n_pos,
-        |  CAST(sum(nn) AS BIGINT) AS n_neg,
-        |  round(CAST(sum(2 * np * below + np * nn) AS DOUBLE)
-        |    / (2.0 * CAST(sum(np) AS DOUBLE) * CAST(sum(nn) AS DOUBLE)),
-        |    6) AS auc
-        |FROM w""".stripMargin,
-
-    "q163_basket_lift" ->
-      """WITH bi AS MATERIALIZED (
-        |  SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |  FROM lineitem
-        |), nb AS (
-        |  SELECT count(DISTINCT bk) AS n_baskets FROM bi
-        |), items AS (
-        |  SELECT it, count(*) AS n_item FROM bi GROUP BY 1
-        |), pairs AS (
-        |  SELECT a.it AS item_a, b.it AS item_b,
-        |    CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM bi a JOIN bi b ON a.bk = b.bk AND a.it < b.it
-        |  GROUP BY 1, 2 HAVING count(*) >= 3
-        |)
-        |SELECT item_a, item_b, n_ab,
-        |  round(CAST(n_ab AS DOUBLE) / CAST(n_baskets AS DOUBLE), 6)
-        |    AS support,
-        |  round(CAST(n_ab AS DOUBLE) / CAST(ia.n_item AS DOUBLE), 6)
-        |    AS conf_ab,
-        |  round(CAST(n_ab AS DOUBLE) / CAST(ib.n_item AS DOUBLE), 6)
-        |    AS conf_ba,
-        |  round(CAST(n_baskets AS DOUBLE) * CAST(n_ab AS DOUBLE)
-        |    / (CAST(ia.n_item AS DOUBLE) * CAST(ib.n_item AS DOUBLE)), 6)
-        |    AS lift
-        |FROM pairs
-        |JOIN items ia ON ia.it = item_a
-        |JOIN items ib ON ib.it = item_b, nb
-        |ORDER BY lift DESC, item_a, item_b LIMIT 100""".stripMargin,
-
-    "q164_rfm" ->
-      """WITH per AS MATERIALIZED (
-        |  SELECT o_custkey AS cust, max(o_orderdate) AS last_d,
-        |    CAST(count(*) AS BIGINT) AS f,
-        |    sum(CAST(o_totalprice AS DECIMAL(38,6))) AS m
-        |  FROM orders GROUP BY 1
-        |), rfm AS MATERIALIZED (
-        |  SELECT cust,
-        |    CAST(date_diff('day', CAST(last_d AS DATE),
-        |      CAST((SELECT max(last_d) FROM per) AS DATE)) AS BIGINT)
-        |      AS r,
-        |    f, CAST(m AS DOUBLE) AS md, m
-        |  FROM per
-        |), fen AS (
-        |  SELECT
-        |    round(quantile_cont(CAST(r AS DOUBLE), 0.2), 6) AS r1,
-        |    round(quantile_cont(CAST(r AS DOUBLE), 0.4), 6) AS r2,
-        |    round(quantile_cont(CAST(r AS DOUBLE), 0.6), 6) AS r3,
-        |    round(quantile_cont(CAST(r AS DOUBLE), 0.8), 6) AS r4,
-        |    round(quantile_cont(CAST(f AS DOUBLE), 0.2), 6) AS f1,
-        |    round(quantile_cont(CAST(f AS DOUBLE), 0.4), 6) AS f2,
-        |    round(quantile_cont(CAST(f AS DOUBLE), 0.6), 6) AS f3,
-        |    round(quantile_cont(CAST(f AS DOUBLE), 0.8), 6) AS f4,
-        |    round(quantile_cont(md, 0.2), 6) AS m1,
-        |    round(quantile_cont(md, 0.4), 6) AS m2,
-        |    round(quantile_cont(md, 0.6), 6) AS m3,
-        |    round(quantile_cont(md, 0.8), 6) AS m4
-        |  FROM rfm
-        |), scoredc AS (
-        |  SELECT
-        |    CAST(6 - (1
-        |      + (CASE WHEN CAST(r AS DOUBLE) > r1 THEN 1 ELSE 0 END)
-        |      + (CASE WHEN CAST(r AS DOUBLE) > r2 THEN 1 ELSE 0 END)
-        |      + (CASE WHEN CAST(r AS DOUBLE) > r3 THEN 1 ELSE 0 END)
-        |      + (CASE WHEN CAST(r AS DOUBLE) > r4 THEN 1 ELSE 0 END))
-        |      AS INT) AS r_score,
-        |    CAST(1
-        |      + (CASE WHEN CAST(f AS DOUBLE) > f1 THEN 1 ELSE 0 END)
-        |      + (CASE WHEN CAST(f AS DOUBLE) > f2 THEN 1 ELSE 0 END)
-        |      + (CASE WHEN CAST(f AS DOUBLE) > f3 THEN 1 ELSE 0 END)
-        |      + (CASE WHEN CAST(f AS DOUBLE) > f4 THEN 1 ELSE 0 END)
-        |      AS INT) AS f_score,
-        |    CAST(1
-        |      + (CASE WHEN md > m1 THEN 1 ELSE 0 END)
-        |      + (CASE WHEN md > m2 THEN 1 ELSE 0 END)
-        |      + (CASE WHEN md > m3 THEN 1 ELSE 0 END)
-        |      + (CASE WHEN md > m4 THEN 1 ELSE 0 END)
-        |      AS INT) AS m_score,
-        |    m
-        |  FROM rfm, fen
-        |)
-        |SELECT r_score, f_score, m_score,
-        |  CAST(count(*) AS BIGINT) AS n_customers,
-        |  round(CAST(sum(m) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-        |    AS avg_m
-        |FROM scoredc GROUP BY 1, 2, 3
-        |ORDER BY r_score, f_score, m_score""".stripMargin,
-
-    "q165_kappa" -> {
-      val profiles = TextAnalysis.langProfiles
-      val scoreCols = profiles.map { case (lang, words) =>
-        val lst = words.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"len(list_filter(tk, t -> list_contains($lst, lower(t)))) AS s_$lang"
-      }.mkString(",\n    ")
-      s"""WITH base AS (
-         |  SELECT doc_id, text, $toksSql AS tk FROM documents
-         |), st AS (
-         |  SELECT doc_id, text,
-         |    CASE WHEN len(tk) = 0 THEN 0.0
-         |      ELSE CAST(len(list_filter(tk,
-         |          t -> list_contains($stopwordsSql, lower(t)))) AS DOUBLE)
-         |        / CAST(len(tk) AS DOUBLE) END AS stopword_ratio,
-         |    CASE WHEN length(text) = 0 THEN 0.0
-         |      ELSE CAST(length(regexp_replace(text,
-         |          '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-         |        / CAST(length(text) AS DOUBLE) END AS punct_ratio,
-         |    $scoreCols
-         |  FROM base
-         |), lab AS (
-         |  SELECT
-         |    round(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-         |      * (1.0 - punct_ratio) * (0.5 + stopword_ratio / 2.0), 6)
-         |      >= 0.3 AS a,
-         |    (CASE WHEN s_de = 0 AND s_en = 0 AND s_es = 0 AND s_fr = 0
-         |        THEN 'und'
-         |      WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr
-         |        THEN 'de'
-         |      WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
-         |      WHEN s_es >= s_fr THEN 'es'
-         |      ELSE 'fr' END) = 'en' AS b
-         |  FROM st
-         |), ct AS MATERIALIZED (
-         |  SELECT a, b, count(*) AS c FROM lab GROUP BY 1, 2
-         |), tot AS (
-         |  SELECT CAST(sum(c) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN a = b THEN c ELSE 0 END) AS BIGINT)
-         |      AS agree
-         |  FROM ct
-         |), ma AS (SELECT a AS cls, sum(c) AS n_a FROM ct GROUP BY 1),
-         |mb AS (SELECT b AS cls, sum(c) AS n_b FROM ct GROUP BY 1),
-         |ch AS (
-         |  SELECT CAST(sum(n_a * n_b) AS BIGINT) AS sum_ab
-         |  FROM ma JOIN mb USING (cls)
-         |), pp AS (
-         |  SELECT n,
-         |    round(CAST(agree AS DOUBLE) / CAST(n AS DOUBLE), 9) AS p_o,
-         |    round(CAST(sum_ab AS DOUBLE)
-         |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 9) AS p_e
-         |  FROM tot, ch
-         |)
-         |SELECT n, p_o, p_e,
-         |  round((p_o - p_e) / (1.0 - p_e), 6) AS kappa
-         |FROM pp""".stripMargin
-    },
-
-    "q166_calibration" ->
-      s"""WITH ${q91Ctes(8, 8.0)},
-         |scored AS (
-         |  SELECT round(1.0 / (1.0 + exp(-(${(0 to 4)
-            .map(j => s"w.w$j * f.x$j").mkString(" + ")}))), 6) AS p,
-         |    f.y
-         |  FROM feats f CROSS JOIN w8 w
-         |), per AS MATERIALIZED (
-         |  SELECT CAST(least(floor(p * 10), 9) AS INT) AS bucket,
-         |    CAST(count(*) AS BIGINT) AS n,
-         |    sum(CAST(p AS DECIMAL(38,6))) AS pm,
-         |    CAST(sum(CAST(y AS BIGINT)) AS BIGINT) AS pos,
-         |    sum(CAST((p - y) * (p - y) AS DECIMAL(38,12))) AS se
-         |  FROM scored GROUP BY 1
-         |), tot AS (
-         |  SELECT CAST(sum(n) AS BIGINT) AS nt, sum(se) AS se_t FROM per
-         |), sc AS MATERIALIZED (
-         |  SELECT bucket, n,
-         |    round(CAST(pm AS DOUBLE) / CAST(n AS DOUBLE), 6) AS conf,
-         |    round(CAST(pos AS DOUBLE) / CAST(n AS DOUBLE), 6) AS acc,
-         |    nt, se_t
-         |  FROM per, tot
-         |), sc2 AS MATERIALIZED (
-         |  SELECT *,
-         |    round((CAST(n AS DOUBLE) / CAST(nt AS DOUBLE))
-         |      * abs(acc - conf), 9) AS contrib
-         |  FROM sc
-         |), ee AS (
-         |  SELECT
-         |    round(CAST(sum(CAST(contrib AS DECIMAL(38,9))) AS DOUBLE), 6)
-         |      AS ece,
-         |    round(CAST(max(se_t) AS DOUBLE) / CAST(max(nt) AS DOUBLE), 6)
-         |      AS brier
-         |  FROM sc2
-         |)
-         |SELECT bucket, n, conf, acc, contrib, ece, brier
-         |FROM sc2, ee ORDER BY bucket""".stripMargin,
-
-    "q167_gini" ->
-      """WITH hist AS (
-        |  SELECT CAST(n_chars AS BIGINT) AS v, count(*) AS c
-        |  FROM documents GROUP BY 1
-        |), h2 AS (
-        |  SELECT v, c, c * v AS m,
-        |    coalesce(sum(c * v) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS mb
-        |  FROM hist
-        |)
-        |SELECT CAST(sum(c) AS BIGINT) AS n,
-        |  CAST(sum(m) AS BIGINT) AS total_mass,
-        |  round(1.0 - CAST(sum(CAST(c AS DECIMAL(19,0))
-        |      * CAST(2 * mb + m AS DECIMAL(19,0))) AS DOUBLE)
-        |    / (CAST(sum(c) AS DOUBLE) * CAST(sum(m) AS DOUBLE)), 6)
-        |    AS gini
-        |FROM h2""".stripMargin,
-
-    "q168_km_retention" ->
-      """WITH per AS MATERIALIZED (
-        |  SELECT user_id, event_type, CAST(min(ts) AS DATE) AS d0,
-        |    CAST(max(ts) AS DATE) AS d1
-        |  FROM events GROUP BY 1, 2
-        |), lt0 AS (
-        |  SELECT CAST(date_diff('day', d0, d1) AS BIGINT) AS t,
-        |    date_diff('day', d1, (SELECT max(d1) FROM per)) < 7
-        |      AS censored
-        |  FROM per
-        |), byt AS (
-        |  SELECT t, CAST(count(*) AS BIGINT) AS n_t,
-        |    CAST(sum(CASE WHEN NOT censored THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS d_churn
-        |  FROM lt0 GROUP BY 1
-        |), risk AS (
-        |  SELECT t, d_churn,
-        |    CAST(sum(n_t) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW
-        |      AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk
-        |  FROM byt
-        |), f AS (
-        |  SELECT t, n_risk, d_churn,
-        |    CASE WHEN d_churn < n_risk THEN
-        |      CAST(round(ln(1.0 - CAST(d_churn AS DOUBLE)
-        |        / CAST(n_risk AS DOUBLE)), 9) AS DECIMAL(38,9))
-        |    ELSE CAST(0 AS DECIMAL(38,9)) END AS lnf
-        |  FROM risk WHERE d_churn > 0
-        |)
-        |SELECT t AS t_days, n_risk, d_churn,
-        |  CASE WHEN d_churn = n_risk THEN 0.0
-        |    ELSE round(exp(CAST(sum(lnf) OVER (ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS DOUBLE)), 6) END AS survival
-        |FROM f ORDER BY t_days""".stripMargin,
-
-    "q169_stl" ->
-      """WITH base AS MATERIALIZED (
-        |  SELECT event_type AS key, date_trunc('hour', ts) AS hour,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2
-        |), wnd AS (
-        |  SELECT key, hour, n,
-        |    count(*) OVER w AS wn, sum(n) OVER w AS ws
-        |  FROM base
-        |  WINDOW w AS (PARTITION BY key ORDER BY hour
-        |    ROWS BETWEEN 12 PRECEDING AND 11 FOLLOWING)
-        |), detr AS MATERIALIZED (
-        |  SELECT key, hour, n,
-        |    round(CAST(ws AS DOUBLE) / 24.0, 6) AS trend,
-        |    CAST(hour(hour) AS INT) AS hod,
-        |    CAST(n AS DOUBLE) - round(CAST(ws AS DOUBLE) / 24.0, 6)
-        |      AS detr
-        |  FROM wnd WHERE wn = 24
-        |), seas AS (
-        |  SELECT key, hod,
-        |    round(CAST(sum(CAST(detr AS DECIMAL(38,6))) AS DOUBLE)
-        |      / CAST(count(*) AS DOUBLE), 6) AS seasonal
-        |  FROM detr GROUP BY 1, 2
-        |)
-        |SELECT d.key, d.hour, d.n, d.trend, se.seasonal,
-        |  round(CAST(d.n AS DOUBLE) - d.trend - se.seasonal, 6) AS resid
-        |FROM detr d JOIN seas se ON d.key = se.key AND d.hod = se.hod
-        |ORDER BY d.key, d.hour""".stripMargin,
-
-    "q170_benford" ->
-      """WITH obs AS (
-        |  SELECT CAST(substr(CAST(CAST(o_totalprice AS DECIMAL(18,2))
-        |      AS VARCHAR), 1, 1) AS INT) AS digit,
-        |    CAST(count(*) AS BIGINT) AS n_obs
-        |  FROM orders WHERE o_totalprice >= 1 GROUP BY 1
-        |), tot AS (SELECT CAST(sum(n_obs) AS BIGINT) AS n FROM obs),
-        |sc AS MATERIALIZED (
-        |  SELECT digit, n_obs,
-        |    round(CAST(n_obs AS DOUBLE) / CAST(n AS DOUBLE), 9)
-        |      AS share,
-        |    round(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0), 9)
-        |      AS expected,
-        |    n
-        |  FROM obs, tot
-        |), sc2 AS MATERIALIZED (
-        |  SELECT *,
-        |    round((share - expected) * (share - expected) / expected
-        |      * CAST(n AS DOUBLE), 9) AS contrib
-        |  FROM sc
-        |), ch AS (
-        |  SELECT round(CAST(sum(CAST(contrib AS DECIMAL(38,9)))
-        |    AS DOUBLE), 6) AS chi2
-        |  FROM sc2
-        |)
-        |SELECT digit, n_obs, share, expected, contrib, chi2
-        |FROM sc2, ch ORDER BY digit""".stripMargin,
-
-    "q171_bfs_hops" -> bfsSql(3),
-
-    "q172_bloom_join" ->
-      """SELECT p_brand, CAST(count(*) AS BIGINT) AS n,
-        |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6)))
-        |    AS DOUBLE), 6) AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_size = 1
-        |GROUP BY 1 ORDER BY p_brand""".stripMargin,
-
-    "q173_merge_upsert" ->
-      """WITH ch AS (
-        |  SELECT o_custkey AS k,
-        |    concat('upd#', CAST(o_orderkey AS VARCHAR)) AS c_name,
-        |    o_totalprice AS c_acctbal,
-        |    CAST(epoch(o_orderdate) AS BIGINT) AS o_ts,
-        |    o_orderkey AS o_tie,
-        |    CASE WHEN o_orderkey % 97 = 0 THEN 'D' ELSE 'U' END AS op
-        |  FROM orders
-        |), u AS (
-        |  SELECT c_custkey AS k, c_name, c_acctbal,
-        |    CAST(-9223372036854775807 - 1 AS BIGINT) AS o_ts,
-        |    CAST(-9223372036854775807 - 1 AS BIGINT) AS o_tie,
-        |    'U' AS op
-        |  FROM customer
-        |  UNION ALL SELECT * FROM ch
-        |), r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY k
-        |    ORDER BY o_ts DESC, o_tie DESC) AS rk
-        |  FROM u
-        |)
-        |SELECT k AS c_custkey, c_name, c_acctbal
-        |FROM r WHERE rk = 1 AND op = 'U'
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q174_ppr" -> {
-      val iter = (k: Int) =>
-        s"""r$k AS MATERIALIZED (
-           |  SELECT n.node,
-           |    round(CAST(0.15 AS DOUBLE) * CAST(n.seed AS DOUBLE)
-           |      + CAST(0.85 AS DOUBLE)
-           |      * CAST(COALESCE(s.c, 0) AS DOUBLE), 12) AS r
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e.dst AS node,
-           |      SUM(CAST(r.r / d.d AS DECIMAL(38,20))) AS c
-           |    FROM edges e
-           |    JOIN r${k - 1} r ON r.node = e.src
-           |    JOIN deg d ON d.src = e.src
-           |    GROUP BY e.dst) s ON s.node = n.node)""".stripMargin
-      s"""WITH base AS MATERIALIZED (
-         |  SELECT DISTINCT 'c' || o_custkey AS c, 's' || l_suppkey AS p
-         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-         |edges AS MATERIALIZED (
-         |  SELECT c AS src, p AS dst FROM base
-         |  UNION ALL SELECT p AS src, c AS dst FROM base),
-         |deg AS MATERIALIZED (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
-         |nodes AS MATERIALIZED (
-         |  SELECT src AS node,
-         |    CASE WHEN src IN (SELECT 'c' || c_custkey FROM customer
-         |      WHERE c_custkey % 131 = 0) THEN 1 ELSE 0 END AS seed
-         |  FROM deg),
-         |r0 AS MATERIALIZED (
-         |  SELECT node, CAST(seed AS DOUBLE) AS r FROM nodes),
-         |${(1 to 5).map(iter).mkString(",\n")}
-         |SELECT node, r AS rank FROM r5 ORDER BY node""".stripMargin
-    },
-
-    "q175_weighted_median" ->
-      """WITH hist AS MATERIALIZED (
-        |  SELECT source AS key, CAST(n_chars AS BIGINT) AS v,
-        |    CAST(sum(CAST(n_chars AS BIGINT)) AS BIGINT) AS wv
-        |  FROM documents GROUP BY 1, 2
-        |), cum AS (
-        |  SELECT key, v,
-        |    sum(wv) OVER (PARTITION BY key ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |    sum(wv) OVER (PARTITION BY key) AS tw
-        |  FROM hist
-        |), pts AS (
-        |  SELECT key, v, cw, tw, p.pct
-        |  FROM cum, (SELECT unnest([25, 50, 75]) AS pct) p
-        |)
-        |SELECT key, CAST(pct AS INT) AS pct,
-        |  CAST(min(v) AS BIGINT) AS value
-        |FROM pts WHERE 100 * cw >= pct * tw
-        |GROUP BY 1, 2 ORDER BY key, pct""".stripMargin,
-
-    "q176_contingency" ->
-      """WITH ct AS MATERIALIZED (
-        |  SELECT event_type AS a, CAST(CAST(hour(ts) AS INT) AS VARCHAR)
-        |      AS b,
-        |    count(*) AS c
-        |  FROM events GROUP BY 1, 2
-        |), tot AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM ct),
-        |ma AS (SELECT a, CAST(sum(c) AS BIGINT) AS ra FROM ct GROUP BY 1),
-        |mb AS (SELECT b, CAST(sum(c) AS BIGINT) AS cb FROM ct GROUP BY 1),
-        |dofs AS (
-        |  SELECT CAST(((SELECT count(*) FROM ma) - 1)
-        |    * ((SELECT count(*) FROM mb) - 1) AS BIGINT) AS dof
-        |), cells AS MATERIALIZED (
-        |  SELECT
-        |    round((CAST(c AS DOUBLE) - e) * (CAST(c AS DOUBLE) - e) / e,
-        |      9) AS chi_t,
-        |    round(e, 9) AS e_t,
-        |    round((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-        |      * ln(CAST(CAST(c AS DECIMAL(19,0)) * CAST(n AS DECIMAL(19,0))
-        |          AS DOUBLE)
-        |        / CAST(CAST(ra AS DECIMAL(19,0)) * CAST(cb AS DECIMAL(19,0))
-        |          AS DOUBLE)), 9) AS mi_t
-        |  FROM (
-        |    SELECT ct.c, ma.ra, mb.cb, tot.n,
-        |      CAST(CAST(ma.ra AS DECIMAL(19,0))
-        |          * CAST(mb.cb AS DECIMAL(19,0)) AS DOUBLE)
-        |        / CAST(tot.n AS DOUBLE) AS e
-        |    FROM ct JOIN ma USING (a) JOIN mb USING (b), tot)
-        |), sums AS (
-        |  SELECT
-        |    CAST(sum(CAST(chi_t AS DECIMAL(38,9))) AS DOUBLE) AS chi_o,
-        |    CAST(sum(CAST(e_t AS DECIMAL(38,9))) AS DOUBLE) AS e_o,
-        |    round(CAST(sum(CAST(mi_t AS DECIMAL(38,9))) AS DOUBLE), 6)
-        |      AS mi
-        |  FROM cells
-        |)
-        |SELECT n, dof,
-        |  round(chi_o + (CAST(n AS DOUBLE) - e_o), 6) AS chi2, mi
-        |FROM tot, dofs, sums""".stripMargin,
-
-    "q177_pct_rank" ->
-      """WITH hist AS (
-        |  SELECT CAST(n_chars AS BIGINT) AS v,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM documents GROUP BY 1
-        |), w AS (
-        |  SELECT v, c,
-        |    coalesce(sum(c) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS below,
-        |    (SELECT sum(c) FROM hist) AS n
-        |  FROM hist
-        |)
-        |SELECT v, c,
-        |  round((CAST(below AS DOUBLE) + 0.5 * CAST(c AS DOUBLE))
-        |    / CAST(n AS DOUBLE), 6) AS pct_rank
-        |FROM w ORDER BY v""".stripMargin,
-
-    "q178_pareto" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, text, n_chars, $toksSql AS tk FROM documents
-         |), st AS (
-         |  SELECT doc_id, n_chars, text,
-         |    CASE WHEN len(tk) = 0 THEN 0.0
-         |      ELSE CAST(len(list_filter(tk,
-         |          t -> list_contains($stopwordsSql, lower(t)))) AS DOUBLE)
-         |        / CAST(len(tk) AS DOUBLE) END AS stopword_ratio,
-         |    CASE WHEN length(text) = 0 THEN 0.0
-         |      ELSE CAST(length(regexp_replace(text,
-         |          '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-         |        / CAST(length(text) AS DOUBLE) END AS punct_ratio
-         |  FROM base
-         |), q AS MATERIALIZED (
-         |  SELECT doc_id, CAST(n_chars AS BIGINT) AS x,
-         |    round(round(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-         |      * (1.0 - punct_ratio) * (0.5 + stopword_ratio / 2.0), 6),
-         |      6) AS y
-         |  FROM st
-         |)
-         |SELECT d.doc_id, d.x, d.y FROM q d
-         |WHERE NOT EXISTS (
-         |  SELECT 1 FROM q o
-         |  WHERE (o.x > d.x AND o.y >= d.y)
-         |     OR (o.x >= d.x AND o.y > d.y))
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "q179_novelty" ->
-      """WITH tk AS (
-        |  SELECT doc_id, source,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM documents
-        |), sh AS MATERIALIZED (
-        |  SELECT doc_id, source,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS shingles
-        |  FROM tk
-        |), ref AS MATERIALIZED (
-        |  SELECT DISTINCT unnest(shingles) AS g FROM sh
-        |  WHERE source = 'src0'
-        |), ex AS (
-        |  SELECT doc_id, unnest(shingles) AS g FROM sh
-        |  WHERE source <> 'src0'
-        |), per AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh,
-        |    CAST(sum(CASE WHEN r.g IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_known
-        |  FROM ex LEFT JOIN ref r USING (g) GROUP BY 1
-        |)
-        |SELECT doc_id, n_sh, n_known,
-        |  round(1.0 - CAST(n_known AS DOUBLE) / CAST(n_sh AS DOUBLE), 6)
-        |    AS novelty
-        |FROM per ORDER BY doc_id""".stripMargin,
-
-    "q180_vocab_growth" ->
-      s"""WITH mx AS (SELECT max(doc_id) AS mx FROM documents),
-         |tb AS MATERIALIZED (
-         |  SELECT CAST((10 * doc_id) // (mx + 1) AS INT) AS batch,
-         |    unnest(tk) AS token
-         |  FROM (SELECT doc_id, $toksSql AS tk FROM documents), mx
-         |), vol AS (
-         |  SELECT batch, CAST(count(*) AS BIGINT) AS n_tokens
-         |  FROM tb GROUP BY 1
-         |), nw AS (
-         |  SELECT batch, CAST(count(*) AS BIGINT) AS new_types
-         |  FROM (SELECT token, min(batch) AS batch FROM tb GROUP BY 1)
-         |  GROUP BY 1
-         |), j AS (
-         |  SELECT v.batch, v.n_tokens,
-         |    coalesce(nw.new_types, 0) AS new_types
-         |  FROM vol v LEFT JOIN nw USING (batch)
-         |), c AS (
-         |  SELECT batch, n_tokens, new_types,
-         |    CAST(sum(new_types) OVER w AS BIGINT) AS vocab_cum,
-         |    CAST(sum(n_tokens) OVER w AS BIGINT) AS tok_cum
-         |  FROM j WINDOW w AS (ORDER BY batch
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |)
-         |SELECT batch, n_tokens, new_types, vocab_cum,
-         |  round(CAST(vocab_cum AS DOUBLE) / CAST(tok_cum AS DOUBLE), 6)
-         |    AS ttr
-         |FROM c ORDER BY batch""".stripMargin,
-
-    "q181_zipf" ->
-      s"""WITH vocab AS MATERIALIZED (
-         |  SELECT token, count(*) AS c
-         |  FROM (SELECT unnest(tk) AS token
-         |        FROM (SELECT $toksSql AS tk FROM documents))
-         |  GROUP BY 1
-         |), r AS (
-         |  SELECT
-         |    CAST(round(ln(CAST(row_number() OVER (ORDER BY c DESC,
-         |      token ASC) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS x,
-         |    CAST(round(ln(CAST(c AS DOUBLE)), 9) AS DECIMAL(18,9)) AS y
-         |  FROM vocab
-         |), s AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n, sum(x) AS sx,
-         |    sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx
-         |  FROM r
-         |), m AS (
-         |  SELECT n, sx, sy,
-         |    (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-         |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-         |    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS m
-         |  FROM s
-         |)
-         |SELECT n AS n_types, round(m, 6) AS slope,
-         |  round((CAST(sy AS DOUBLE) - m * CAST(sx AS DOUBLE))
-         |    / CAST(n AS DOUBLE), 6) AS intercept
-         |FROM m""".stripMargin,
-
-    "q182_burstiness" ->
-      """WITH e AS (
-        |  SELECT user_id AS entity, epoch_us(ts) // 1000000 AS es, ts
-        |  FROM events
-        |), g AS (
-        |  SELECT entity,
-        |    es - lag(es) OVER (PARTITION BY entity ORDER BY ts) AS g
-        |  FROM e
-        |), agg AS (
-        |  SELECT entity, CAST(count(*) AS BIGINT) AS n_gaps,
-        |    CAST(sum(g) AS BIGINT) AS s, CAST(sum(g * g) AS BIGINT) AS ss
-        |  FROM g WHERE g IS NOT NULL GROUP BY 1
-        |), m AS (
-        |  SELECT entity, n_gaps,
-        |    round(CAST(s AS DOUBLE) / CAST(n_gaps AS DOUBLE), 3)
-        |      AS mean_gap_s,
-        |    CAST(s AS DOUBLE) / CAST(n_gaps AS DOUBLE) AS mu,
-        |    sqrt((CAST(ss AS DOUBLE)
-        |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-        |        / CAST(n_gaps AS DOUBLE))
-        |      / CAST(n_gaps AS DOUBLE)) AS sigma
-        |  FROM agg
-        |)
-        |SELECT entity, n_gaps, mean_gap_s,
-        |  CASE WHEN sigma + mu = 0.0 THEN -1.0
-        |    ELSE round((sigma - mu) / (sigma + mu), 6) END AS burstiness
-        |FROM m ORDER BY entity""".stripMargin,
-
-    "q183_scorecard" -> {
-      val profiles = TextAnalysis.langProfiles
-      val scoreCols = profiles.map { case (lang, words) =>
-        val lst = words.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"len(list_filter(raw, t -> list_contains($lst, lower(t)))) AS s_$lang"
-      }.mkString(",\n    ")
-      s"""WITH tk AS (
-         |  SELECT doc_id, text, n_chars,
-         |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
-         |      AS raw
-         |  FROM documents
-         |), st AS (
-         |  SELECT doc_id, text, n_chars, raw,
-         |    CASE WHEN len(raw) < 3 THEN [array_to_string(raw, ' ')]
-         |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-         |            for i in range(0, len(raw) - 2)] END AS g3,
-         |    CASE WHEN len(raw) = 0 THEN 0.0
-         |      ELSE CAST(len(list_filter(raw,
-         |          t -> list_contains($stopwordsSql, lower(t)))) AS DOUBLE)
-         |        / CAST(len(raw) AS DOUBLE) END AS stopword_ratio,
-         |    CASE WHEN length(text) = 0 THEN 0.0
-         |      ELSE CAST(length(regexp_replace(text,
-         |          '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-         |        / CAST(length(text) AS DOUBLE) END AS punct_ratio,
-         |    $scoreCols
-         |  FROM tk
-         |), scored AS MATERIALIZED (
-         |  SELECT doc_id, CAST(n_chars AS BIGINT) AS v,
-         |    round(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-         |      * (1.0 - punct_ratio) * (0.5 + stopword_ratio / 2.0), 6)
-         |      AS quality,
-         |    CASE WHEN len(g3) <= 0 THEN 0.0 ELSE round(1.0 -
-         |      CAST(len(list_distinct(g3)) AS DOUBLE)
-         |        / CAST(len(g3) AS DOUBLE), 6) END AS dup3,
-         |    (CASE WHEN s_de = 0 AND s_en = 0 AND s_es = 0 AND s_fr = 0
-         |        THEN 'und'
-         |      WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr
-         |        THEN 'de'
-         |      WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
-         |      WHEN s_es >= s_fr THEN 'es'
-         |      ELSE 'fr' END) = 'en' AS is_en
-         |  FROM st
-         |), hist AS (
-         |  SELECT v, CAST(count(*) AS BIGINT) AS c FROM scored GROUP BY 1
-         |), w AS (
-         |  SELECT v,
-         |    coalesce(sum(c) OVER (ORDER BY v
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |      AS below,
-         |    c, (SELECT sum(c) FROM hist) AS n
-         |  FROM hist
-         |), pr AS (
-         |  SELECT v,
-         |    round((CAST(below AS DOUBLE) + 0.5 * CAST(c AS DOUBLE))
-         |      / CAST(n AS DOUBLE), 6) AS len_pr
-         |  FROM w
-         |)
-         |SELECT doc_id, quality, dup3, is_en, len_pr,
-         |  (quality >= 0.25 AND dup3 <= 0.2 AND is_en
-         |    AND len_pr >= 0.02 AND len_pr <= 0.98) AS keep
-         |FROM scored JOIN pr USING (v)
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "q184_rake" ->
-      s"""WITH tk AS (
-         |  SELECT doc_id,
-         |    list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |      x -> x <> '') AS raw
-         |  FROM documents
-         |), mk AS (
-         |  SELECT doc_id,
-         |    array_to_string(list_transform(raw,
-         |      t -> CASE WHEN list_contains($stopwordsSql, t)
-         |        THEN '|' ELSE t END), ' ') AS s
-         |  FROM tk
-         |), ph0 AS (
-         |  SELECT doc_id,
-         |    unnest(list_filter(list_transform(
-         |      regexp_split_to_array(s, ' *\\| *'), x -> trim(x)),
-         |      x -> x <> '')) AS phrase
-         |  FROM mk
-         |), ph AS MATERIALIZED (
-         |  SELECT doc_id, phrase FROM ph0
-         |  WHERE len(regexp_split_to_array(phrase, ' ')) <= 4
-         |), pw AS (
-         |  SELECT doc_id, phrase,
-         |    len(regexp_split_to_array(phrase, ' ')) AS plen,
-         |    unnest(regexp_split_to_array(phrase, ' ')) AS word
-         |  FROM ph
-         |), ws AS MATERIALIZED (
-         |  SELECT doc_id, word,
-         |    round(CAST(sum(plen) AS DOUBLE) / CAST(count(*) AS DOUBLE),
-         |      9) AS wscore
-         |  FROM pw GROUP BY 1, 2
-         |), pd AS (
-         |  SELECT doc_id, phrase,
-         |    unnest(regexp_split_to_array(phrase, ' ')) AS word
-         |  FROM (SELECT DISTINCT doc_id, phrase FROM ph)
-         |), ps AS (
-         |  SELECT p.doc_id, p.phrase,
-         |    round(CAST(sum(CAST(w.wscore AS DECIMAL(18,9))) AS DOUBLE),
-         |      6) AS score
-         |  FROM pd p JOIN ws w
-         |    ON p.doc_id = w.doc_id AND p.word = w.word
-         |  GROUP BY 1, 2
-         |), r AS (
-         |  SELECT doc_id, phrase, score, row_number() OVER (
-         |    PARTITION BY doc_id ORDER BY score DESC, phrase ASC) AS rk
-         |  FROM ps
-         |)
-         |SELECT doc_id, phrase, score FROM r WHERE rk = 1
-         |ORDER BY doc_id""".stripMargin,
-
-    "q185_fd_audit" ->
-      """WITH r1 AS (
-        |  SELECT 'l_orderkey->l_suppkey' AS fd,
-        |    CAST(count(*) AS BIGINT) AS n_keys,
-        |    CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS bad_keys,
-        |    CAST(sum(CASE WHEN nd > 1 THEN nr ELSE 0 END) AS BIGINT)
-        |      AS bad_rows
-        |  FROM (SELECT l_orderkey, count(*) AS nr,
-        |          count(DISTINCT l_suppkey) AS nd
-        |        FROM lineitem GROUP BY 1)
-        |), r2 AS (
-        |  SELECT 'l_partkey->l_suppkey' AS fd,
-        |    CAST(count(*) AS BIGINT) AS n_keys,
-        |    CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS bad_keys,
-        |    CAST(sum(CASE WHEN nd > 1 THEN nr ELSE 0 END) AS BIGINT)
-        |      AS bad_rows
-        |  FROM (SELECT l_partkey, count(*) AS nr,
-        |          count(DISTINCT l_suppkey) AS nd
-        |        FROM lineitem GROUP BY 1)
-        |), r3 AS (
-        |  SELECT 'l_orderkey->l_shipdate' AS fd,
-        |    CAST(count(*) AS BIGINT) AS n_keys,
-        |    CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS bad_keys,
-        |    CAST(sum(CASE WHEN nd > 1 THEN nr ELSE 0 END) AS BIGINT)
-        |      AS bad_rows
-        |  FROM (SELECT l_orderkey, count(*) AS nr,
-        |          count(DISTINCT l_shipdate) AS nd
-        |        FROM lineitem GROUP BY 1)
-        |)
-        |SELECT * FROM r1 UNION ALL SELECT * FROM r2
-        |UNION ALL SELECT * FROM r3
-        |ORDER BY fd""".stripMargin,
-
-    "q186_corr_matrix" -> {
-      val cs = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      def d(c: String) = s"CAST($c AS DECIMAL(19,6))"
-      val sums =
-        (cs.map(c => s"sum(${d(c)}) AS s_$c") ++
-          cs.map(c => s"sum(${d(c)} * ${d(c)}) AS ss_$c") ++
-          cs.combinations(2).map { case Seq(a, b) =>
-            s"sum(${d(a)} * ${d(b)}) AS sp_${a}__$b"
-          }).mkString(",\n    ")
-      val pairs = cs.combinations(2).map { case Seq(a, b) =>
-        s"""SELECT '$a' AS col_a, '$b' AS col_b,
-           |  round((CAST(n AS DOUBLE) * CAST(sp_${a}__$b AS DOUBLE)
-           |      - CAST(s_$a AS DOUBLE) * CAST(s_$b AS DOUBLE))
-           |    / sqrt((CAST(n AS DOUBLE) * CAST(ss_$a AS DOUBLE)
-           |        - CAST(s_$a AS DOUBLE) * CAST(s_$a AS DOUBLE))
-           |      * (CAST(n AS DOUBLE) * CAST(ss_$b AS DOUBLE)
-           |        - CAST(s_$b AS DOUBLE) * CAST(s_$b AS DOUBLE))), 6)
-           |    AS r
-           |  FROM one""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH one AS MATERIALIZED (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |    $sums
-         |  FROM lineitem
-         |)
-         |$pairs
-         |ORDER BY col_a, col_b""".stripMargin
-    },
-
-    "q187_conv_lag" ->
-      """WITH c AS (
-        |  SELECT event_id AS click_id, user_id, epoch_us(ts) AS cts
-        |  FROM events WHERE event_type = 'click'
-        |), p AS (
-        |  SELECT user_id, epoch_us(ts) AS pts
-        |  FROM events WHERE event_type = 'purchase'
-        |), m AS (
-        |  SELECT c.click_id, c.cts, min(p.pts) AS npts
-        |  FROM c JOIN p ON c.user_id = p.user_id AND p.pts >= c.cts
-        |  GROUP BY 1, 2
-        |), l AS (
-        |  SELECT (npts - cts) // 1000000 AS lag_s
-        |  FROM m WHERE npts - cts <= 3600000000
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_converted,
-        |  round(quantile_cont(CAST(lag_s AS DOUBLE), 0.25), 6) AS p25,
-        |  round(quantile_cont(CAST(lag_s AS DOUBLE), 0.5), 6) AS p50,
-        |  round(quantile_cont(CAST(lag_s AS DOUBLE), 0.75), 6) AS p75,
-        |  round(quantile_cont(CAST(lag_s AS DOUBLE), 0.9), 6) AS p90
-        |FROM l""".stripMargin,
-
-    "q188_fisher" ->
-      """WITH cell AS MATERIALIZED (
-        |  SELECT label, u.pos,
-        |    CAST(count(*) AS BIGINT) AS n_c,
-        |    sum(CAST(round(CAST(u.x AS DOUBLE), 6) AS DECIMAL(15,6)))
-        |      AS s_c,
-        |    sum(CAST(round(CAST(u.x AS DOUBLE), 6) AS DECIMAL(15,6))
-        |      * CAST(round(CAST(u.x AS DOUBLE), 6) AS DECIMAL(15,6)))
-        |      AS ss_c
-        |  FROM (SELECT label, g.i AS pos, embedding[g.i] AS x
-        |        FROM embeddings,
-        |          unnest(generate_series(1, len(embedding))) AS g(i))
-        |    AS u
-        |  GROUP BY 1, 2
-        |), dim AS (
-        |  SELECT pos, CAST(sum(n_c) AS BIGINT) AS n_t, sum(s_c) AS s_t
-        |  FROM cell GROUP BY 1
-        |), scat AS (
-        |  SELECT
-        |    round(CAST(n_c AS DOUBLE)
-        |      * (CAST(s_c AS DOUBLE) / CAST(n_c AS DOUBLE)
-        |        - CAST(s_t AS DOUBLE) / CAST(n_t AS DOUBLE))
-        |      * (CAST(s_c AS DOUBLE) / CAST(n_c AS DOUBLE)
-        |        - CAST(s_t AS DOUBLE) / CAST(n_t AS DOUBLE)), 9) AS bt,
-        |    round(CAST(ss_c AS DOUBLE)
-        |      - CAST(s_c AS DOUBLE) * CAST(s_c AS DOUBLE)
-        |        / CAST(n_c AS DOUBLE), 9) AS wt
-        |  FROM cell JOIN dim USING (pos)
-        |), ks AS (
-        |  SELECT CAST(count(DISTINCT label) AS INT) AS n_classes,
-        |    CAST(max(pos) AS INT) AS n_dims
-        |  FROM cell
-        |), tot AS (
-        |  SELECT
-        |    round(CAST(sum(CAST(bt AS DECIMAL(38,9))) AS DOUBLE), 6)
-        |      AS between_s,
-        |    round(CAST(sum(CAST(wt AS DECIMAL(38,9))) AS DOUBLE), 6)
-        |      AS within_s
-        |  FROM scat
-        |)
-        |SELECT n_classes, n_dims, between_s AS "between",
-        |  within_s AS "within",
-        |  round(between_s / within_s, 6) AS fisher
-        |FROM ks, tot""".stripMargin,
-
-    "q189_langid_eval" -> {
-      val profiles = TextAnalysis.langProfiles
-      val scoreCols = profiles.map { case (lang, words) =>
-        val lst = words.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"len(list_filter(tk, t -> list_contains($lst, lower(t)))) AS s_$lang"
-      }.mkString(",\n    ")
-      s"""WITH base AS (
-         |  SELECT lang AS actual, $toksSql AS tk FROM documents
-         |), scored AS (
-         |  SELECT actual, $scoreCols FROM base
-         |), pred AS (
-         |  SELECT actual,
-         |    CASE WHEN s_de = 0 AND s_en = 0 AND s_es = 0 AND s_fr = 0
-         |      THEN 'und'
-         |    WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr
-         |      THEN 'de'
-         |    WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
-         |    WHEN s_es >= s_fr THEN 'es'
-         |    ELSE 'fr' END AS predicted
-         |  FROM scored
-         |), cm AS MATERIALIZED (
-         |  SELECT actual, predicted, CAST(count(*) AS BIGINT) AS n
-         |  FROM pred GROUP BY 1, 2
-         |), tot AS (
-         |  SELECT actual, CAST(sum(n) AS BIGINT) AS n_actual
-         |  FROM cm GROUP BY 1
-         |)
-         |SELECT cm.actual, cm.predicted, cm.n,
-         |  round(CAST(cm.n AS DOUBLE) / CAST(tot.n_actual AS DOUBLE), 6)
-         |    AS share
-         |FROM cm JOIN tot USING (actual)
-         |ORDER BY actual, predicted""".stripMargin
-    },
-
-    "q190_dup_matrix" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id, raw,
-        |    CASE WHEN len(raw) < 3 THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END AS shingles
-        |  FROM tk
-        |), sig AS (
-        |  SELECT doc_id, shingles,
-        |    [list_min([md5(CAST(i AS VARCHAR) || '|' || s) for s in shingles])
-        |     for i in range(0, 16)] AS mh
-        |  FROM sh
-        |), banded AS (
-        |  SELECT doc_id, shingles,
-        |    unnest([CAST(b AS VARCHAR) || '_'
-        |            || array_to_string(mh[b*4+1:b*4+4], '|')
-        |            for b in range(0, 4)]) AS bandkey
-        |  FROM sig
-        |), pairs AS (
-        |  SELECT DISTINCT l.doc_id AS a_id, r.doc_id AS b_id,
-        |    l.shingles AS a_sh, r.shingles AS b_sh
-        |  FROM banded l JOIN banded r ON l.bandkey = r.bandkey
-        |  WHERE l.doc_id < r.doc_id
-        |), verified AS (
-        |  SELECT a_id, b_id
-        |  FROM pairs
-        |  WHERE round(CASE
-        |    WHEN len(list_distinct(list_concat(a_sh, b_sh))) = 0 THEN 0.0
-        |    ELSE CAST(len(list_intersect(list_distinct(a_sh),
-        |          list_distinct(b_sh))) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a_sh, b_sh)))
-        |        AS DOUBLE)
-        |    END, 6) >= 0.5
-        |)
-        |SELECT least(sa.source, sb.source) AS s1,
-        |  greatest(sa.source, sb.source) AS s2,
-        |  CAST(count(*) AS BIGINT) AS n_pairs
-        |FROM verified v
-        |JOIN documents sa ON sa.doc_id = v.a_id
-        |JOIN documents sb ON sb.doc_id = v.b_id
-        |GROUP BY 1, 2
-        |ORDER BY s1, s2""".stripMargin,
-
-    "q191_session_stats" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
-        |         WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), numbered AS (
-        |  SELECT user_id, ts,
-        |    CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM flagged
-        |), sess AS (
-        |  SELECT user_id, session_seq,
-        |    epoch_us(max(ts)) // 1000000 - epoch_us(min(ts)) // 1000000
-        |      AS dur_s,
-        |    count(*) AS n_events
-        |  FROM numbered GROUP BY 1, 2
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS n_sessions,
-        |  round(CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END)
-        |      AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS bounce_rate,
-        |  round(quantile_cont(CAST(dur_s AS DOUBLE), 0.5), 6)
-        |    AS p50_dur_s,
-        |  round(quantile_cont(CAST(dur_s AS DOUBLE), 0.9), 6)
-        |    AS p90_dur_s,
-        |  round(CAST(sum(n_events) AS DOUBLE) / CAST(count(*) AS DOUBLE),
-        |    6) AS avg_events
-        |FROM sess""".stripMargin,
-
-    // DuckDB re-trains the multinomial NB through the identical count/ln
-    // algebra (labels hardcoded to the fixture's langs in ascending order
-    // — the Spark side discovers the same set from the train slice).
-    "q192_nb_langid" ->
-      s"""${nbChainSql("substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'")}
-         |, cm AS MATERIALIZED (
-         |  SELECT actual, predicted, CAST(count(*) AS BIGINT) AS n
-         |  FROM pred GROUP BY 1, 2
-         |), tot AS (
-         |  SELECT actual, CAST(sum(n) AS BIGINT) AS n_actual
-         |  FROM cm GROUP BY 1
-         |)
-         |SELECT cm.actual, cm.predicted, cm.n,
-         |  round(CAST(cm.n AS DOUBLE) / CAST(tot.n_actual AS DOUBLE), 6)
-         |    AS share
-         |FROM cm JOIN tot USING (actual)
-         |ORDER BY actual, predicted""".stripMargin,
-
-    "q193_readability" ->
-      """WITH g AS (
-        |  SELECT grp,
-        |    round(0.39 * (words / sents) + 11.8 * (sylls / words)
-        |      - 15.59, 6) AS fk
-        |  FROM (
-        |    SELECT source AS grp,
-        |      CAST(greatest(len(list_filter(
-        |        regexp_split_to_array(text, '\s+'), x -> x <> '')), 1)
-        |        AS DOUBLE) AS words,
-        |      CAST(greatest(len(regexp_extract_all(text,
-        |        '[^.!?]*[^.!?\s][^.!?]*')), 1) AS DOUBLE) AS sents,
-        |      CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |        AS DOUBLE) AS sylls
-        |    FROM documents)
-        |)
-        |SELECT grp, CAST(count(*) AS BIGINT) AS n_docs,
-        |  round(CAST(sum(CAST(fk AS DECIMAL(38,6))) AS DOUBLE)
-        |    / count(*), 6) AS mean_fk,
-        |  min(fk) AS min_fk, max(fk) AS max_fk
-        |FROM g GROUP BY grp ORDER BY grp""".stripMargin,
-
-    "q194_lex_diversity" ->
-      """WITH tk AS MATERIALIZED (
-        |  SELECT source AS grp,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM documents
-        |), u AS MATERIALIZED (
-        |  SELECT grp, CAST(count(*) AS BIGINT) AS types_1,
-        |    CAST(sum(c) AS BIGINT) AS occ_1
-        |  FROM (SELECT grp, gram, count(*) AS c
-        |        FROM (SELECT grp, unnest(raw) AS gram FROM tk)
-        |        GROUP BY 1, 2)
-        |  GROUP BY 1
-        |), b AS MATERIALIZED (
-        |  SELECT grp, CAST(count(*) AS BIGINT) AS types_2,
-        |    CAST(sum(c) AS BIGINT) AS occ_2
-        |  FROM (SELECT grp, gram, count(*) AS c
-        |        FROM (SELECT grp,
-        |                unnest([array_to_string(raw[i+1:i+2], ' ')
-        |                        for i in range(0, len(raw) - 1)]) AS gram
-        |              FROM tk)
-        |        GROUP BY 1, 2)
-        |  GROUP BY 1
-        |)
-        |SELECT u.grp, u.types_1, u.occ_1,
-        |  round(CAST(u.types_1 AS DOUBLE) / CAST(u.occ_1 AS DOUBLE), 6)
-        |    AS distinct_1,
-        |  coalesce(b.types_2, 0) AS types_2,
-        |  coalesce(b.occ_2, 0) AS occ_2,
-        |  CASE WHEN coalesce(b.occ_2, 0) = 0 THEN 0.0
-        |    ELSE round(CAST(b.types_2 AS DOUBLE) / CAST(b.occ_2 AS DOUBLE),
-        |      6) END AS distinct_2
-        |FROM u LEFT JOIN b ON u.grp = b.grp
-        |ORDER BY u.grp""".stripMargin,
-
-    "q195_dp_release" ->
-      """WITH cnt AS (
-        |  SELECT event_type AS grp, CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1
-        |), uu AS (
-        |  SELECT grp, n,
-        |    (CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |      (strpos('0123456789abcdef',
-        |        substr(md5('dp|' || grp), i + 1, 1)) - 1)
-        |      for i in range(0, 8)]) AS DOUBLE) + 0.5) / 4294967296.0 AS u
-        |  FROM cnt
-        |)
-        |SELECT grp,
-        |  round(n + round(-1.0 * sign(u - 0.5)
-        |    * ln(1.0 - 2.0 * abs(u - 0.5)), 9), 6) AS released_n
-        |FROM uu ORDER BY grp""".stripMargin,
-
-    "q196_ewma_hourly" ->
-      """WITH hourly AS MATERIALIZED (
-        |  SELECT event_type AS key, date_trunc('hour', ts) AS hour,
-        |    epoch_us(date_trunc('hour', ts)) // 1000000 AS eh,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2, 3
-        |), terms AS (
-        |  SELECT key AS akey, eh + k * 3600 AS teh,
-        |    n * CAST(round(pow(2, 24 - k)) AS BIGINT) AS num_t,
-        |    CAST(round(pow(2, 24 - k)) AS BIGINT) AS den_t
-        |  FROM (SELECT key, eh, n, unnest(range(0, 25)) AS k FROM hourly)
-        |), agg AS (
-        |  SELECT akey, teh, CAST(sum(num_t) AS BIGINT) AS num,
-        |    CAST(sum(den_t) AS BIGINT) AS den
-        |  FROM terms GROUP BY 1, 2
-        |)
-        |SELECT h.key, strftime(h.hour, '%Y-%m-%d %H:00') AS hour, h.n,
-        |  round(CAST(a.num AS DOUBLE) / CAST(a.den AS DOUBLE), 6) AS ewma
-        |FROM hourly h JOIN agg a ON a.akey = h.key AND a.teh = h.eh
-        |ORDER BY h.key, hour""".stripMargin,
-
-    "q197_l_diversity" ->
-      """WITH tup AS (
-        |  SELECT event_type,
-        |    CAST(extract(hour FROM ts) AS INTEGER) AS hb,
-        |    CAST(floor(value / 10.0) AS BIGINT) AS vb,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(count(DISTINCT user_id) AS BIGINT) AS ndist
-        |  FROM events GROUP BY 1, 2, 3
-        |)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_tuples,
-        |  CAST(sum(CASE WHEN ndist < 3 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_low_div_tuples,
-        |  CAST(sum(CASE WHEN ndist < 3 THEN n ELSE 0 END) AS BIGINT)
-        |    AS n_risky_rows,
-        |  min(ndist) AS min_diversity
-        |FROM tup GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // DuckDB replays the full power iteration: decimal-exact moment
-    // cells, covariance round(12), per-round matrix-vector products as
-    // DECIMAL(38,12) sums of round(c·w, 12), normalization by the signed
-    // max-|component| (tie: lowest index) — the q91/q107 unrolled-round
-    // contract for a driver-resident model.
-    "q198_pca_top_component" -> {
-      val d = 64
-      val iters = 5
-      val sb = new StringBuilder
-      sb ++= s"""WITH cells AS MATERIALIZED (
-         |  SELECT vec_id, i.range AS i,
-         |    CAST(embedding[i.range + 1] AS DOUBLE) AS x
-         |  FROM embeddings, range(0, $d) i
-         |), mu AS MATERIALIZED (
-         |  SELECT i, round(CAST(sum(CAST(x AS DECIMAL(38,20))) AS DOUBLE)
-         |    / count(*), 12) AS mu
-         |  FROM cells GROUP BY i
-         |), m AS MATERIALIZED (
-         |  SELECT a.i AS i, b.i AS j,
-         |    round(CAST(sum(CAST(a.x * b.x AS DECIMAL(38,20))) AS DOUBLE)
-         |      / count(*), 12) AS m
-         |  FROM cells a JOIN cells b ON a.vec_id = b.vec_id
-         |  GROUP BY 1, 2
-         |), c AS MATERIALIZED (
-         |  SELECT m.i, m.j, round(m.m - mi.mu * mj.mu, 12) AS c
-         |  FROM m JOIN mu mi ON mi.i = m.i JOIN mu mj ON mj.i = m.j
-         |), w0 AS (SELECT range AS i, 1.0 AS w FROM range(0, $d))
-         |""".stripMargin
-      for (t <- 1 to iters) {
-        sb ++= s""", r$t AS MATERIALIZED (
-         |  SELECT c.i,
-         |    CAST(sum(CAST(round(c.c * w.w, 12) AS DECIMAL(38,12)))
-         |      AS DOUBLE) AS raw
-         |  FROM c JOIN w${t - 1} w ON w.i = c.j GROUP BY 1
-         |), s$t AS (
-         |  SELECT raw AS s FROM r$t ORDER BY abs(raw) DESC, i ASC LIMIT 1
-         |), w$t AS (SELECT i, raw / (SELECT s FROM s$t) AS w FROM r$t)
-         |""".stripMargin
-      }
-      sb ++= s"SELECT CAST(i AS INTEGER) AS i, round(w, 6) AS loading" +
-        s" FROM w$iters ORDER BY i"
-      sb.toString
-    },
-
-    // unrolled Gonzalez rounds: each center is the argmax of the running
-    // least squared distance (decimal-exact terms, round(6), ties to the
-    // lowest id) — identical algebra to the Spark literal-center passes.
-    "q199_kcenter_coreset" -> {
-      def dist(a: String, b: String) =
-        s"""round(CAST(list_sum(list_transform(list_zip($a, $b),
-           |    z -> CAST((CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-           |      * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-           |      AS DECIMAL(38,20)))) AS DOUBLE), 6)""".stripMargin
-      val k = 5
-      val sb = new StringBuilder
-      sb ++= s"""WITH e AS MATERIALIZED (
-         |  SELECT vec_id, embedding FROM embeddings
-         |), c0 AS (SELECT vec_id, embedding FROM e ORDER BY vec_id LIMIT 1
-         |), m1 AS MATERIALIZED (
-         |  SELECT e.vec_id, e.embedding,
-         |    ${dist("e.embedding", "c.embedding")} AS md
-         |  FROM e, c0 c
-         |)""".stripMargin
-      for (r <- 1 until k) {
-        sb ++= s"""
-         |, c$r AS (SELECT vec_id, embedding, md FROM m$r
-         |    ORDER BY md DESC, vec_id LIMIT 1)""".stripMargin
-        if (r < k - 1)
-          sb ++= s"""
-         |, m${r + 1} AS MATERIALIZED (
-         |  SELECT m.vec_id, m.embedding,
-         |    least(m.md, ${dist("m.embedding", "c.embedding")}) AS md
-         |  FROM m$r m, c$r c
-         |)""".stripMargin
-      }
-      sb ++= s"""
-         |SELECT CAST(0 AS INTEGER) AS rk,
-         |  (SELECT vec_id FROM c0) AS id, CAST(0.0 AS DOUBLE) AS dist
-         |""".stripMargin
-      for (r <- 1 until k)
-        sb ++= s"""UNION ALL SELECT CAST($r AS INTEGER), vec_id, md FROM c$r
-         |""".stripMargin
-      sb ++= "ORDER BY rk"
-      sb.toString
-    },
-
-    "q200_tokenizer_fertility" ->
-      s"""WITH tk AS (
-         |  SELECT doc_id, lang,
-         |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
-         |      AS raw
-         |  FROM documents
-         |), w AS (
-         |  SELECT doc_id, unnest(raw) AS word FROM tk
-         |), cnt AS (
-         |  SELECT doc_id,
-         |    CAST(SUM(${graft.operators.Bpe.replaySqlTokenCount("word",
-                  graft.operators.Bpe.FixtureMerges)}) AS BIGINT) AS n_bpe
-         |  FROM w GROUP BY doc_id
-         |)
-         |SELECT tk.lang, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(len(tk.raw)) AS BIGINT) AS n_words,
-         |  CAST(sum(COALESCE(cnt.n_bpe, 0)) AS BIGINT) AS n_bpe_tokens,
-         |  round(CAST(sum(COALESCE(cnt.n_bpe, 0)) AS DOUBLE)
-         |    / CAST(sum(len(tk.raw)) AS DOUBLE), 6) AS fertility
-         |FROM tk LEFT JOIN cnt USING (doc_id)
-         |GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    // brute-force n² differential (the q141/q178 pattern): DuckDB scores
-    // EVERY pair exactly; the Spark side must recover the identical set
-    // through the prefix filter — a genuine recall-1.0 check.
-    "q201_setjoin_exact" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM documents
-        |), sh AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS sh
-        |  FROM tk
-        |), pairs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    len(list_intersect(a.sh, b.sh)) AS inter,
-        |    len(list_distinct(list_concat(a.sh, b.sh))) AS uni
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |)
-        |SELECT a_id, b_id,
-        |  round(CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE), 6) AS jaccard
-        |FROM pairs WHERE inter * 2 >= 1 * uni
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q202_weighted_paths" -> wspSql(3),
-
-    "q203_nb_crossval" -> {
-      val bounds = Seq(("0", "3"), ("4", "7"), ("8", "b"), ("c", "f"))
-      bounds.zipWithIndex.map { case ((lo, hi), f) =>
-        val h = "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)"
-        val chain = nbChainSql(s"NOT ($h >= '$lo' AND $h <= '$hi')")
-        s"""SELECT * FROM (
-           |$chain
-           |SELECT CAST($f AS INTEGER) AS fold,
-           |  CAST(count(*) AS BIGINT) AS n_test,
-           |  CAST(sum(CASE WHEN actual = predicted THEN 1 ELSE 0 END)
-           |    AS BIGINT) AS n_correct,
-           |  round(CAST(sum(CASE WHEN actual = predicted THEN 1 ELSE 0
-           |      END) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-           |    AS accuracy
-           |FROM pred
-           |)""".stripMargin
-      }.mkString("", "\nUNION ALL ", "\nORDER BY fold")
-    },
-
-    // two nested BM25 chains (the inner WITHs shadow; the expanded term
-    // set rides the outer CTE scope) — run 1 with the literal base
-    // query, expansion by integer tf rank over the feedback docs, run 2
-    // with `t IN (SELECT t FROM allq)`.
-    "q204_rm3_retrieval" -> {
-      val baseList = "'spark', 'join'"
-      s"""WITH q0 AS (SELECT unnest([$baseList]) AS t),
-         |run1 AS MATERIALIZED (
-         |  SELECT * FROM (
-         |${bm25Sql(baseList, 5)}
-         |  )
-         |), expt AS MATERIALIZED (
-         |  SELECT t FROM (
-         |    SELECT x.t, CAST(count(*) AS BIGINT) AS tf
-         |    FROM (
-         |      SELECT doc_id,
-         |        unnest(list_filter(regexp_split_to_array(text, '\\s+'),
-         |          x -> x <> '')) AS t
-         |      FROM documents) x
-         |    JOIN run1 ON run1.doc_id = x.doc_id
-         |    WHERE x.t NOT IN (SELECT t FROM q0)
-         |    GROUP BY 1
-         |    ORDER BY tf DESC, t ASC LIMIT 3)
-         |), allq AS MATERIALIZED (
-         |  SELECT t FROM q0 UNION ALL SELECT t FROM expt
-         |)
-         |SELECT * FROM (
-         |${bm25Sql("SELECT t FROM allq", 20)}
-         |)""".stripMargin
-    },
-
-    "q205_freq_triples" ->
-      """WITH bi AS MATERIALIZED (
-        |  SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |  FROM lineitem
-        |), fp AS MATERIALIZED (
-        |  SELECT a.it AS i1, b.it AS i2
-        |  FROM bi a JOIN bi b ON a.bk = b.bk AND a.it < b.it
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), cand AS MATERIALIZED (
-        |  SELECT p.i1, p.i2, q.i2 AS i3
-        |  FROM fp p JOIN fp q ON p.i1 = q.i1 AND p.i2 < q.i2
-        |  WHERE EXISTS (SELECT 1 FROM fp c
-        |                WHERE c.i1 = p.i2 AND c.i2 = q.i2)
-        |), sup AS (
-        |  SELECT a.it AS i1, b.it AS i2, c.it AS i3,
-        |    CAST(count(*) AS BIGINT) AS support
-        |  FROM bi a
-        |  JOIN bi b ON a.bk = b.bk AND a.it < b.it
-        |  JOIN bi c ON a.bk = c.bk AND b.it < c.it
-        |  JOIN cand ON cand.i1 = a.it AND cand.i2 = b.it
-        |    AND cand.i3 = c.it
-        |  GROUP BY 1, 2, 3 HAVING count(*) >= 2
-        |)
-        |SELECT i1, i2, i3, support FROM sup
-        |ORDER BY support DESC, i1, i2, i3 LIMIT 50""".stripMargin,
-
-    "q206_join_card" -> {
-      def edge(lt: String, lk: String, rt: String, rk: String,
-               label: String) =
-        s"""SELECT '$label' AS edge,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM $lt) AS n_l,
-           |  (SELECT CAST(count(DISTINCT $lk) AS BIGINT) FROM $lt) AS d_l,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM $rt) AS n_r,
-           |  (SELECT CAST(count(DISTINCT $rk) AS BIGINT) FROM $rt) AS d_r,
-           |  round(CAST((SELECT count(*) FROM $lt) AS DOUBLE)
-           |      * CAST((SELECT count(*) FROM $rt) AS DOUBLE)
-           |    / CAST(greatest(
-           |        (SELECT count(DISTINCT $lk) FROM $lt),
-           |        (SELECT count(DISTINCT $rk) FROM $rt)) AS DOUBLE), 6)
-           |    AS est,
-           |  (SELECT CAST(coalesce(sum(cl * cr), 0) AS BIGINT) FROM
-           |    (SELECT $lk AS k, count(*) AS cl FROM $lt GROUP BY 1) l
-           |    JOIN
-           |    (SELECT $rk AS k, count(*) AS cr FROM $rt GROUP BY 1) r
-           |    ON l.k = r.k) AS n_join""".stripMargin
-      s"""WITH base AS (
-         |${edge("lineitem", "l_orderkey", "orders", "o_orderkey",
-                "lineitem->orders")}
-         |UNION ALL
-         |${edge("lineitem", "l_partkey", "part", "p_partkey",
-                "lineitem->part")}
-         |)
-         |SELECT edge, n_l, d_l, n_r, d_r, est, n_join,
-         |  CASE WHEN n_join = 0 THEN CAST(0.0 AS DOUBLE)
-         |    ELSE round(est / CAST(n_join AS DOUBLE), 6) END AS ratio
-         |FROM base ORDER BY edge""".stripMargin
-    },
-
-    // exact ball sizes; the sketch estimate is engine-specific, so the
-    // hash-checked column is the q19/q126 gate boolean (oracle: TRUE)
-    "q207_neighborhood_fn" ->
-      """WITH e0 AS MATERIALIZED (
-        |  SELECT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), sym AS MATERIALIZED (
-        |  SELECT DISTINCT src, dst FROM (
-        |    SELECT u AS src, v AS dst FROM e0
-        |    UNION ALL SELECT v, u FROM e0)
-        |  WHERE src <> dst
-        |), m1 AS MATERIALIZED (
-        |  SELECT src AS node, dst AS member FROM sym
-        |  UNION ALL SELECT DISTINCT src, src FROM sym
-        |), b1 AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS n1 FROM m1 GROUP BY 1
-        |), m2 AS (
-        |  SELECT DISTINCT node, member FROM (
-        |    SELECT node, member FROM m1
-        |    UNION ALL
-        |    SELECT s.src AS node, m.member
-        |    FROM sym s JOIN m1 m ON m.node = s.dst)
-        |), b2 AS (
-        |  SELECT node, CAST(count(*) AS BIGINT) AS n2 FROM m2 GROUP BY 1
-        |)
-        |SELECT b1.node, b1.n1, b2.n2, TRUE AS within_tol
-        |FROM b1 JOIN b2 USING (node) ORDER BY node""".stripMargin,
-
-    "q208_snippets" -> {
-      s"""WITH tk AS MATERIALIZED (
-         |  SELECT doc_id,
-         |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
-         |      AS raw
-         |  FROM documents
-         |), run AS MATERIALIZED (
-         |  SELECT * FROM (
-         |${bm25Sql("'spark', 'join', 'window'", 10)}
-         |  )
-         |), sn AS (
-         |  SELECT doc_id,
-         |    array_to_string(
-         |      raw[greatest(p - 3, 1) : greatest(p - 3, 1) + 7], ' ')
-         |      AS snippet
-         |  FROM (
-         |    SELECT doc_id, raw,
-         |      least(nullif(list_position(raw, 'spark'), 0),
-         |            nullif(list_position(raw, 'join'), 0),
-         |            nullif(list_position(raw, 'window'), 0)) AS p
-         |    FROM tk)
-         |)
-         |SELECT run.rk, run.doc_id, run.score, sn.snippet
-         |FROM run JOIN sn USING (doc_id) ORDER BY rk""".stripMargin
-    },
-
-    // ground truth = the brute-forced exact pair set (q201's oracle);
-    // LSH = q190's banding chain; the rollup certifies q37's config
-    "q209_lsh_recall_cert" ->
-      """WITH tk AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM documents
-        |), shd AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS sh
-        |  FROM tk
-        |), exactp AS MATERIALIZED (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM shd a JOIN shd b ON a.doc_id < b.doc_id
-        |  WHERE len(list_intersect(a.sh, b.sh)) * 2
-        |    >= len(list_distinct(list_concat(a.sh, b.sh)))
-        |), shn AS MATERIALIZED (
-        |  SELECT doc_id, raw,
-        |    CASE WHEN len(raw) < 3 THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END AS shingles
-        |  FROM tk
-        |), sig AS (
-        |  SELECT doc_id, shingles,
-        |    [list_min([md5(CAST(i AS VARCHAR) || '|' || s)
-        |      for s in shingles])
-        |     for i in range(0, 16)] AS mh
-        |  FROM shn
-        |), banded AS (
-        |  SELECT doc_id, shingles,
-        |    unnest([CAST(b AS VARCHAR) || '_'
-        |            || array_to_string(mh[b*4+1:b*4+4], '|')
-        |            for b in range(0, 4)]) AS bandkey
-        |  FROM sig
-        |), pairs AS (
-        |  SELECT DISTINCT l.doc_id AS a_id, r.doc_id AS b_id,
-        |    l.shingles AS a_sh, r.shingles AS b_sh
-        |  FROM banded l JOIN banded r ON l.bandkey = r.bandkey
-        |  WHERE l.doc_id < r.doc_id
-        |), verified AS MATERIALIZED (
-        |  SELECT a_id, b_id
-        |  FROM pairs
-        |  WHERE round(CASE
-        |    WHEN len(list_distinct(list_concat(a_sh, b_sh))) = 0 THEN 0.0
-        |    ELSE CAST(len(list_intersect(list_distinct(a_sh),
-        |          list_distinct(b_sh))) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a_sh, b_sh)))
-        |        AS DOUBLE)
-        |    END, 6) >= 0.5
-        |)
-        |SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM exactp) AS n_exact,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM verified) AS n_lsh,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM exactp e
-        |     JOIN verified v ON e.a_id = v.a_id AND e.b_id = v.b_id)
-        |    AS n_common,
-        |  round(CAST((SELECT count(*) FROM exactp e JOIN verified v
-        |      ON e.a_id = v.a_id AND e.b_id = v.b_id) AS DOUBLE)
-        |    / CAST((SELECT count(*) FROM verified) AS DOUBLE), 6)
-        |    AS precision,
-        |  round(CAST((SELECT count(*) FROM exactp e JOIN verified v
-        |      ON e.a_id = v.a_id AND e.b_id = v.b_id) AS DOUBLE)
-        |    / CAST((SELECT count(*) FROM exactp) AS DOUBLE), 6)
-        |    AS recall""".stripMargin,
-
-    "q211_trending_terms" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id % 2 AS b, unnest($toksSql) AS tk FROM documents
-         |), counts AS MATERIALIZED (
-         |  SELECT tk,
-         |    CAST(sum(CASE WHEN b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0,
-         |    CAST(sum(CASE WHEN b = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1
-         |  FROM tok GROUP BY 1
-         |), tot AS (
-         |  SELECT CAST(sum(c0) AS BIGINT) AS t0,
-         |    CAST(sum(c1) AS BIGINT) AS t1,
-         |    CAST(count(*) AS BIGINT) AS v
-         |  FROM counts
-         |)
-         |SELECT tk AS token, c0, c1,
-         |  round(CAST((c1 + 1) * (t0 + v) AS DOUBLE)
-         |    / CAST((c0 + 1) * (t1 + v) AS DOUBLE), 6) AS ratio
-         |FROM counts, tot WHERE c1 >= 5
-         |ORDER BY ratio DESC, token ASC LIMIT 15""".stripMargin,
-
-    "q212_multitouch_attribution" ->
-      """WITH tch AS (
-        |  SELECT user_id, ts, event_type FROM events
-        |  WHERE event_type <> 'purchase'
-        |), pur AS (
-        |  SELECT user_id, event_id AS pid, ts AS pts FROM events
-        |  WHERE event_type = 'purchase'
-        |), pairs AS MATERIALIZED (
-        |  SELECT t.event_type, p.pid,
-        |    round(CAST(1800.0 AS DOUBLE) / (CAST(1800.0 AS DOUBLE)
-        |      + CAST(epoch_us(p.pts) // 1000000
-        |          - epoch_us(t.ts) // 1000000 AS DOUBLE)), 6) AS w
-        |  FROM tch t JOIN pur p ON t.user_id = p.user_id
-        |    AND t.ts >= p.pts - INTERVAL 1 HOUR AND t.ts <= p.pts
-        |), pw AS (
-        |  SELECT pid, sum(CAST(w AS DECIMAL(38,6))) AS wsum
-        |  FROM pairs GROUP BY 1
-        |), sh AS (
-        |  SELECT event_type, round(w / CAST(wsum AS DOUBLE), 6) AS share
-        |  FROM pairs JOIN pw USING (pid)
-        |)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_touches,
-        |  round(CAST(sum(CAST(share AS DECIMAL(38,6))) AS DOUBLE), 6)
-        |    AS credit
-        |FROM sh GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // the oracle runs the ONE global window the Spark side must avoid —
-    // fine single-node, and it pins the bucketed two-phase prefix sum
-    "q213_budget_select" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, source, CAST(len($toksSql) AS BIGINT) AS w,
-         |    round(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-         |      * (1.0 - CASE WHEN length(text) = 0 THEN 0.0
-         |          ELSE CAST(length(regexp_replace(text,
-         |              '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-         |            / CAST(length(text) AS DOUBLE) END)
-         |      * (0.5 + (CASE WHEN len($toksSql) = 0 THEN 0.0
-         |          ELSE CAST(len(list_filter($toksSql,
-         |              t -> list_contains($stopwordsSql, lower(t))))
-         |              AS DOUBLE)
-         |            / CAST(len($toksSql) AS DOUBLE) END) / 2.0), 6) AS s
-         |  FROM documents
-         |), cum AS (
-         |  SELECT source, w,
-         |    CAST(sum(w) OVER (ORDER BY s DESC, doc_id ASC
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-         |  FROM base
-         |)
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN cum - w < 10000 THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_selected,
-         |  CAST(sum(CASE WHEN cum - w < 10000 THEN w ELSE 0 END)
-         |    AS BIGINT) AS tokens_selected
-         |FROM cum GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q214_golden_record" ->
-      """WITH RECURSIVE tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS shingles
-        |  FROM tk
-        |), pairs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
-        |          AS DOUBLE) >= 0.5
-        |), edges AS (
-        |  SELECT a_id AS s, b_id AS d FROM pairs
-        |  UNION SELECT b_id, a_id FROM pairs
-        |), reach(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION
-        |  SELECT r.s, e.d FROM reach r JOIN edges e ON e.s = r.d
-        |), cl AS MATERIALIZED (
-        |  SELECT s AS doc_id, least(s, min(d)) AS cluster_id
-        |  FROM reach GROUP BY s
-        |), mem AS MATERIALIZED (
-        |  SELECT cl.cluster_id, d.doc_id, d.source,
-        |    CAST(len(list_filter(regexp_split_to_array(d.text, '\s+'),
-        |      x -> x <> '')) AS BIGINT) AS toks
-        |  FROM cl JOIN documents d USING (doc_id)
-        |), a1 AS (
-        |  SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-        |    min(doc_id) AS rep_id, CAST(sum(toks) AS BIGINT) AS n_tokens
-        |  FROM mem GROUP BY 1
-        |), sc AS MATERIALIZED (
-        |  SELECT cluster_id, source, CAST(count(*) AS BIGINT) AS n
-        |  FROM mem GROUP BY 1, 2
-        |), mx AS (SELECT cluster_id, max(n) AS mxn FROM sc GROUP BY 1),
-        |top AS (
-        |  SELECT sc.cluster_id, min(sc.source) AS top_source,
-        |    CAST(max(sc.n) AS BIGINT) AS n_top_source
-        |  FROM sc JOIN mx USING (cluster_id) WHERE sc.n = mxn
-        |  GROUP BY 1
-        |)
-        |SELECT a1.cluster_id, a1.n_members, a1.rep_id, a1.n_tokens,
-        |  top.top_source, top.n_top_source
-        |FROM a1 JOIN top USING (cluster_id)
-        |ORDER BY cluster_id""".stripMargin,
-
-    "q215_cms_mergeable" -> {
-      // CMS bucket of token under depth hash i: first 8 md5 hex digits
-      // of "i|token" as an integer, % width — mirrors Stats.cmsHeavyHitters
-      def bkt(tok: String) =
-        s"""list_sum([CAST(round(pow(16, 7 - j)) AS BIGINT) *
-           |      (strpos('0123456789abcdef',
-           |        substr(md5(CAST(i AS VARCHAR) || '|' || $tok),
-           |          j + 1, 1)) - 1)
-           |      for j in range(0, 8)]) % 32""".stripMargin
-      s"""WITH tk AS (
-         |  SELECT doc_id % 2 AS batch,
-         |    unnest(list_filter(regexp_split_to_array(text, '\\s+'),
-         |      x -> x <> '')) AS token
-         |  FROM documents
-         |), tc AS MATERIALIZED (
-         |  SELECT batch, token, COUNT(*) AS c FROM tk GROUP BY 1, 2
-         |), cells AS (
-         |  SELECT batch, i AS depth,
-         |    ${bkt("token")} AS bucket, c
-         |  FROM tc CROSS JOIN range(0, 3) t(i)
-         |), sk AS MATERIALIZED (
-         |  SELECT depth, bucket, CAST(SUM(c) AS BIGINT) AS cell
-         |  FROM cells GROUP BY 1, 2
-         |), tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total FROM tc),
-         |cand AS (
-         |  SELECT token, CAST(SUM(c) AS BIGINT) AS exact_cnt
-         |  FROM tc GROUP BY 1
-         |), cd AS (
-         |  SELECT token, exact_cnt, i AS depth,
-         |    ${bkt("token")} AS bucket
-         |  FROM cand CROSS JOIN range(0, 3) t(i)
-         |), est AS (
-         |  SELECT cd.token, MAX(cd.exact_cnt) AS exact_cnt,
-         |    MIN(sk.cell) AS cms_est
-         |  FROM cd JOIN sk ON sk.depth = cd.depth AND sk.bucket = cd.bucket
-         |  GROUP BY cd.token
-         |)
-         |SELECT token, exact_cnt, cms_est,
-         |  CAST(cms_est - exact_cnt AS BIGINT) AS overcount
-         |FROM est, tot
-         |WHERE CAST(cms_est AS DOUBLE) >= 0.002 * CAST(n_total AS DOUBLE)
-         |ORDER BY cms_est DESC, token""".stripMargin
-    },
-
-    "q216_group_ols" ->
-      """WITH one AS (
-        |  SELECT l_returnflag AS grp, CAST(COUNT(*) AS BIGINT) AS n,
-        |    SUM(CAST(l_quantity AS DECIMAL(19,6))) AS sx,
-        |    SUM(CAST(l_extendedprice AS DECIMAL(19,6))) AS sy,
-        |    SUM(CAST(l_quantity AS DECIMAL(19,6))
-        |      * CAST(l_quantity AS DECIMAL(19,6))) AS sxx,
-        |    SUM(CAST(l_extendedprice AS DECIMAL(19,6))
-        |      * CAST(l_extendedprice AS DECIMAL(19,6))) AS syy,
-        |    SUM(CAST(l_quantity AS DECIMAL(19,6))
-        |      * CAST(l_extendedprice AS DECIMAL(19,6))) AS sxy
-        |  FROM lineitem GROUP BY 1
-        |), v AS (
-        |  SELECT grp, n, CAST(n AS DOUBLE) AS nd,
-        |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS varx,
-        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS vary,
-        |    CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS cov
-        |  FROM one
-        |)
-        |SELECT grp, n,
-        |  CASE WHEN varx = 0 THEN NULL
-        |    ELSE round(cov / varx, 6) END AS slope,
-        |  CASE WHEN varx = 0 THEN NULL
-        |    ELSE round((syd - (cov / varx) * sxd) / nd, 6) END AS intercept,
-        |  CASE WHEN varx = 0 OR vary = 0 THEN NULL
-        |    ELSE round(cov * cov / (varx * vary), 6) END AS r2
-        |FROM v ORDER BY grp""".stripMargin,
-
-    "q217_ks_drift" ->
-      """WITH e AS (
-        |  SELECT CAST(floor(value * 100) AS BIGINT) AS v,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN 1 ELSE 0 END AS is_ref
-        |  FROM events
-        |), h AS MATERIALIZED (
-        |  SELECT v, CAST(SUM(is_ref) AS BIGINT) AS ca,
-        |    CAST(SUM(1 - is_ref) AS BIGINT) AS cb
-        |  FROM e GROUP BY 1
-        |), t AS (
-        |  SELECT CAST(SUM(ca) AS BIGINT) AS n_ref,
-        |    CAST(SUM(cb) AS BIGINT) AS n_cur FROM h
-        |), d AS MATERIALIZED (
-        |  SELECT v, n_ref, n_cur,
-        |    round(abs(
-        |      CAST(SUM(ca) OVER (ORDER BY v) AS DOUBLE)
-        |        / CAST(n_ref AS DOUBLE)
-        |      - CAST(SUM(cb) OVER (ORDER BY v) AS DOUBLE)
-        |        / CAST(n_cur AS DOUBLE)), 9) AS dd
-        |  FROM h, t
-        |), m AS (SELECT MAX(dd) AS ks FROM d)
-        |SELECT n_ref, n_cur, ks, CAST(MIN(v) AS BIGINT) AS ks_at
-        |FROM d, m WHERE d.dd = m.ks
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q218_grid_density" ->
-      """WITH RECURSIVE p AS (
-        |  SELECT vec_id,
-        |    CAST(floor(CAST(embedding[1] AS DOUBLE) / 0.03) AS BIGINT) AS cx,
-        |    CAST(floor(CAST(embedding[2] AS DOUBLE) / 0.03) AS BIGINT) AS cy
-        |  FROM embeddings
-        |), cells AS (
-        |  SELECT cx, cy, COUNT(*) AS n,
-        |    (cx + 1048576) * 2097152 + (cy + 1048576) AS k
-        |  FROM p GROUP BY 1, 2
-        |), dense AS (SELECT * FROM cells WHERE n >= 6),
-        |e0 AS (
-        |  SELECT d1.k AS a, d2.k AS b FROM dense d1 JOIN dense d2
-        |  ON abs(d1.cx - d2.cx) <= 1 AND abs(d1.cy - d2.cy) <= 1
-        |    AND d1.k < d2.k
-        |), edges AS (
-        |  SELECT a AS s, b AS d FROM e0
-        |  UNION SELECT b, a FROM e0
-        |), reach(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION SELECT r.s, e.d FROM reach r JOIN edges e ON e.s = r.d
-        |), lab AS (SELECT s AS k, least(s, MIN(d)) AS ck
-        |  FROM reach GROUP BY s
-        |), dl AS (
-        |  SELECT d.cx, d.cy, COALESCE(l.ck, d.k) AS ck
-        |  FROM dense d LEFT JOIN lab l ON l.k = d.k
-        |), asg AS (
-        |  SELECT p.vec_id AS pid, p.cx, p.cy, dl.ck
-        |  FROM p LEFT JOIN dl ON dl.cx = p.cx AND dl.cy = p.cy
-        |), g AS (
-        |  SELECT COALESCE(ck, -1) AS g, MIN(pid) AS rep,
-        |    CAST(COUNT(DISTINCT (cx + 1048576) * 2097152 + (cy + 1048576))
-        |      AS BIGINT) AS n_cells,
-        |    CAST(COUNT(*) AS BIGINT) AS n_points
-        |  FROM asg GROUP BY 1
-        |)
-        |SELECT CASE WHEN g = -1 THEN -1 ELSE rep END AS cluster_id,
-        |  n_cells, n_points
-        |FROM g ORDER BY cluster_id""".stripMargin,
-
-    "q219_partition_audit" ->
-      """WITH kc AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS k, COUNT(*) AS n
-        |  FROM events GROUP BY 1
-        |), pk AS (
-        |  SELECT n, list_sum([CAST(round(pow(16, 7 - j)) AS BIGINT) *
-        |    (strpos('0123456789abcdef', substr(md5(k), j + 1, 1)) - 1)
-        |    for j in range(0, 8)]) % 8 AS part
-        |  FROM kc
-        |), parts AS (
-        |  SELECT part, CAST(SUM(n) AS BIGINT) AS n_rows,
-        |    CAST(COUNT(*) AS BIGINT) AS n_keys
-        |  FROM pk GROUP BY 1
-        |), tot AS (SELECT CAST(SUM(n_rows) AS BIGINT) AS n_total FROM parts)
-        |SELECT r.part, COALESCE(p.n_rows, 0) AS n_rows,
-        |  COALESCE(p.n_keys, 0) AS n_keys,
-        |  round(CAST(COALESCE(p.n_rows, 0) AS DOUBLE)
-        |    / (CAST(n_total AS DOUBLE) / 8.0), 6) AS load_ratio
-        |FROM range(0, 8) r(part) LEFT JOIN parts p ON p.part = r.part, tot
-        |ORDER BY r.part""".stripMargin,
-
-    "q220_residual_outliers" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, source,
-         |    CAST(len($toksSql) AS BIGINT) AS toks, n_chars
-         |  FROM documents
-         |), one AS (
-         |  SELECT source AS grp, CAST(COUNT(*) AS BIGINT) AS n,
-         |    SUM(CAST(toks AS DECIMAL(19,6))) AS sx,
-         |    SUM(CAST(n_chars AS DECIMAL(19,6))) AS sy,
-         |    SUM(CAST(toks AS DECIMAL(19,6))
-         |      * CAST(toks AS DECIMAL(19,6))) AS sxx,
-         |    SUM(CAST(n_chars AS DECIMAL(19,6))
-         |      * CAST(n_chars AS DECIMAL(19,6))) AS syy,
-         |    SUM(CAST(toks AS DECIMAL(19,6))
-         |      * CAST(n_chars AS DECIMAL(19,6))) AS sxy
-         |  FROM d GROUP BY 1
-         |), v AS (
-         |  SELECT grp, CAST(n AS DOUBLE) AS nd,
-         |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-         |    CAST(syy AS DOUBLE) AS syyd, CAST(sxy AS DOUBLE) AS sxyd,
-         |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS varx,
-         |    CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-         |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS cov
-         |  FROM one
-         |), c AS (
-         |  SELECT grp, cov / varx AS b,
-         |    (syd - (cov / varx) * sxd) / nd AS a,
-         |    sqrt(greatest(0.0,
-         |      (syyd - ((syd - (cov / varx) * sxd) / nd) * syd
-         |        - (cov / varx) * sxyd) / nd)) AS rmse
-         |  FROM v WHERE varx <> 0
-         |), scored AS (
-         |  SELECT d.doc_id, d.source AS grp, d.toks, d.n_chars,
-         |    CAST(d.n_chars AS DOUBLE) - (c.a + c.b * CAST(d.toks AS DOUBLE))
-         |      AS resid, c.rmse
-         |  FROM d JOIN c ON c.grp = d.source
-         |  WHERE c.rmse > 0
-         |)
-         |SELECT doc_id, grp, toks, n_chars, round(resid, 6) AS resid,
-         |  round(abs(resid) / rmse, 6) AS z
-         |FROM scored WHERE abs(resid) > 2.0 * rmse
-         |ORDER BY doc_id""".stripMargin,
-
-    "q221_ks_by_segment" ->
-      """WITH e AS (
-        |  SELECT event_type AS g, CAST(floor(value * 100) AS BIGINT) AS v,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN 1 ELSE 0 END AS is_ref
-        |  FROM events
-        |), h AS MATERIALIZED (
-        |  SELECT g, v, CAST(SUM(is_ref) AS BIGINT) AS ca,
-        |    CAST(SUM(1 - is_ref) AS BIGINT) AS cb
-        |  FROM e GROUP BY 1, 2
-        |), d AS MATERIALIZED (
-        |  SELECT g, v,
-        |    CAST(SUM(ca) OVER (PARTITION BY g) AS BIGINT) AS n_ref,
-        |    CAST(SUM(cb) OVER (PARTITION BY g) AS BIGINT) AS n_cur,
-        |    round(abs(
-        |      CAST(SUM(ca) OVER (PARTITION BY g ORDER BY v) AS DOUBLE)
-        |        / CAST(SUM(ca) OVER (PARTITION BY g) AS DOUBLE)
-        |      - CAST(SUM(cb) OVER (PARTITION BY g ORDER BY v) AS DOUBLE)
-        |        / CAST(SUM(cb) OVER (PARTITION BY g) AS DOUBLE)), 9) AS dd
-        |  FROM h
-        |), df AS (
-        |  SELECT * FROM d WHERE n_ref > 0 AND n_cur > 0
-        |), m AS (SELECT g, MAX(dd) AS ks FROM df GROUP BY 1)
-        |SELECT df.g, n_ref, n_cur, ks, CAST(MIN(v) AS BIGINT) AS ks_at
-        |FROM df JOIN m ON m.g = df.g AND df.dd = m.ks
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY df.g""".stripMargin,
-
-    "q222_embedding_drift" ->
-      """WITH x AS (
-        |  SELECT vec_id % 4 AS batch,
-        |    unnest(range(0, len(embedding))) AS dim, embedding AS e
-        |  FROM embeddings
-        |), x2 AS (
-        |  SELECT batch, dim,
-        |    CAST(round(CAST(e[CAST(dim + 1 AS INT)] AS DOUBLE), 6)
-        |      AS DECIMAL(15,6)) AS v
-        |  FROM x
-        |), cells AS (
-        |  SELECT batch, dim,
-        |    CAST(SUM(v) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS md,
-        |    CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM x2 GROUP BY 1, 2
-        |), j AS (
-        |  SELECT a.batch AS bf, a.dim, a.md AS ma, b.md AS mb,
-        |    a.n AS n_from, b.n AS n_to
-        |  FROM cells a JOIN cells b
-        |    ON b.dim = a.dim AND b.batch = a.batch + 1
-        |), agg AS (
-        |  SELECT bf, MAX(n_from) AS n_from, MAX(n_to) AS n_to,
-        |    SUM(CAST(round(ma * mb, 15) AS DECIMAL(20,15))) AS dot,
-        |    SUM(CAST(round(ma * ma, 15) AS DECIMAL(20,15))) AS na,
-        |    SUM(CAST(round(mb * mb, 15) AS DECIMAL(20,15))) AS nb
-        |  FROM j GROUP BY 1
-        |)
-        |SELECT bf AS batch_from, bf + 1 AS batch_to, n_from, n_to,
-        |  round(CAST(dot AS DOUBLE)
-        |    / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6)
-        |    AS cosine
-        |FROM agg ORDER BY batch_from""".stripMargin,
-
-    // replays q154's label-prop chain, then the modularity algebra over
-    // the same canonical edge set (e0 is already u<v, deduped)
-    "q226_modularity" -> (labelPropBodySql(rounds = 3) + """,
-      |labs AS MATERIALIZED (
-      |  SELECT node, lab AS label FROM l3 WHERE lab IS NOT NULL
-      |), mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e0
-      |), deg AS (
-      |  SELECT n AS node, CAST(count(*) AS BIGINT) AS d
-      |  FROM (SELECT u AS n FROM e0 UNION ALL SELECT v FROM e0)
-      |  GROUP BY 1
-      |), com AS (
-      |  SELECT label, CAST(count(*) AS BIGINT) AS n_nodes,
-      |    CAST(sum(d) AS BIGINT) AS degree_sum
-      |  FROM labs JOIN deg USING (node) GROUP BY 1
-      |), intra AS (
-      |  SELECT la.label, CAST(count(*) AS BIGINT) AS ie
-      |  FROM e0 e JOIN labs la ON e.u = la.node
-      |  JOIN labs lb ON e.v = lb.node
-      |  WHERE la.label = lb.label GROUP BY 1
-      |)
-      |SELECT c.label AS community, c.n_nodes,
-      |  CAST(coalesce(i.ie, 0) AS BIGINT) AS intra_edges, c.degree_sum,
-      |  round(CAST(coalesce(i.ie, 0) AS DOUBLE) / CAST(m.m AS DOUBLE)
-      |    - (CAST(c.degree_sum AS DOUBLE) / CAST(m.m * 2 AS DOUBLE))
-      |      * (CAST(c.degree_sum AS DOUBLE) / CAST(m.m * 2 AS DOUBLE)),
-      |    6) AS contribution
-      |FROM com c LEFT JOIN intra i USING (label), mm m
-      |ORDER BY community""".stripMargin),
-
-    "q229_unseen_vocab" ->
-      """WITH raw AS (
-        |  SELECT source,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM documents
-        |), tk AS (
-        |  SELECT source, unnest(CASE WHEN len(raw) < 3
-        |    THEN [array_to_string(raw, ' ')]
-        |    ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |          for i in range(0, len(raw) - 2)] END) AS term
-        |  FROM raw
-        |), tc AS (
-        |  SELECT source, term, CAST(count(*) AS BIGINT) AS c
-        |  FROM tk GROUP BY 1, 2
-        |), ff AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS vocab,
-        |    CAST(sum(c) AS BIGINT) AS n_tokens,
-        |    CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM tc GROUP BY source
-        |)
-        |SELECT source, vocab, n_tokens, n1, n2,
-        |  round(CAST(n1 AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6)
-        |    AS missing_mass,
-        |  round(CAST(vocab AS DOUBLE)
-        |    + CAST(n1 * (n1 - 1) AS DOUBLE)
-        |      / CAST((n2 + 1) * 2 AS DOUBLE), 6) AS chao1
-        |FROM ff ORDER BY source""".stripMargin,
-
-    "q227_woe_iv" ->
-      """WITH base AS (
-        |  SELECT (lang = 'en') AS good,
-        |    least(n_chars // 100, 5) AS len_bin,
-        |    least(greatest((n_chars * 10)
-        |      // greatest(len(list_filter(regexp_split_to_array(text,
-        |            '\s+'), x -> x <> '')), 1) - 50, 0), 9) AS wordlen_bin
-        |  FROM documents
-        |), rows_ AS (
-        |  SELECT 'len_bin' AS feature, len_bin AS bin, good FROM base
-        |  UNION ALL
-        |  SELECT 'wordlen_bin', wordlen_bin, good FROM base
-        |), cnt AS (
-        |  SELECT feature, CAST(bin AS BIGINT) AS bin,
-        |    CAST(sum(CASE WHEN good THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_good,
-        |    CAST(sum(CASE WHEN good THEN 0 ELSE 1 END) AS BIGINT)
-        |      AS n_bad
-        |  FROM rows_ GROUP BY 1, 2
-        |), tot AS (
-        |  SELECT feature, CAST(sum(n_good) AS BIGINT) AS tg,
-        |    CAST(sum(n_bad) AS BIGINT) AS tb
-        |  FROM cnt GROUP BY 1
-        |), scored AS (
-        |  SELECT feature, bin, n_good, n_bad,
-        |    round(ln(((CAST(n_good AS DOUBLE) + 0.5)
-        |        / (CAST(tg AS DOUBLE) + 0.5))
-        |      / ((CAST(n_bad AS DOUBLE) + 0.5)
-        |        / (CAST(tb AS DOUBLE) + 0.5))), 6) AS woe,
-        |    CAST(round((((CAST(n_good AS DOUBLE) + 0.5)
-        |        / (CAST(tg AS DOUBLE) + 0.5))
-        |      - ((CAST(n_bad AS DOUBLE) + 0.5)
-        |        / (CAST(tb AS DOUBLE) + 0.5)))
-        |      * ln(((CAST(n_good AS DOUBLE) + 0.5)
-        |        / (CAST(tg AS DOUBLE) + 0.5))
-        |      / ((CAST(n_bad AS DOUBLE) + 0.5)
-        |        / (CAST(tb AS DOUBLE) + 0.5))), 9) AS DECIMAL(38,9))
-        |      AS term
-        |  FROM cnt JOIN tot USING (feature)
-        |), iv AS (
-        |  SELECT feature, round(CAST(sum(term) AS DOUBLE), 6) AS iv
-        |  FROM scored GROUP BY 1
-        |)
-        |SELECT feature, bin, n_good, n_bad, woe, iv
-        |FROM scored JOIN iv USING (feature)
-        |ORDER BY feature, bin""".stripMargin,
-
-    // the subset/weight constant table is emitted by the SAME
-    // enumeration the Spark side joins against (Stats.shapleySubsets)
-    "q223_shapley_attribution" -> {
-      val values = operators.Stats
-        .shapleySubsets(Seq("click", "error", "signup", "view"))
-        .map { case (ch, sk, tk, w) => s"('$ch', '$sk', '$tk', $w)" }
-        .mkString(",\n  ")
-      s"""WITH j AS (
-         |  SELECT user_id, CAST(ts AS DATE) AS day,
-         |    coalesce(array_to_string(list_sort(list_distinct(
-         |      list(event_type) FILTER (WHERE event_type <> 'purchase'))),
-         |      ','), '') AS set_key,
-         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-         |      AS conv
-         |  FROM events GROUP BY 1, 2
-         |), js AS (
-         |  SELECT set_key, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(conv) AS BIGINT) AS c
-         |  FROM j WHERE set_key <> '' GROUP BY 1
-         |), sub(channel, s_key, t_key, w_num) AS (VALUES
-         |  $values
-         |), sv AS (
-         |  SELECT channel, w_num, s.n AS ns, s.c AS cs, t.n AS nt,
-         |    t.c AS ct
-         |  FROM sub LEFT JOIN js s ON s.set_key = sub.s_key
-         |  LEFT JOIN js t ON t.set_key = sub.t_key
-         |), terms AS (
-         |  SELECT channel, coalesce(ns, 0) AS nsz, coalesce(cs, 0) AS csz,
-         |    CAST(round((CAST(w_num AS DOUBLE) *
-         |      ((CASE WHEN ns IS NULL THEN 0.0
-         |         ELSE CAST(cs AS DOUBLE) / CAST(ns AS DOUBLE) END)
-         |       - (CASE WHEN nt IS NULL THEN 0.0
-         |         ELSE CAST(ct AS DOUBLE) / CAST(nt AS DOUBLE) END)))
-         |      / 24.0, 9) AS DECIMAL(38,9)) AS term
-         |  FROM sv
-         |)
-         |SELECT channel, CAST(sum(nsz) AS BIGINT) AS n_journeys,
-         |  CAST(sum(csz) AS BIGINT) AS n_conversions,
-         |  round(CAST(sum(term) AS DOUBLE), 6) AS shapley
-         |FROM terms GROUP BY 1 ORDER BY channel""".stripMargin
-    },
-
-    "q225_reshard_audit" ->
-      """WITH k AS (
-        |  SELECT DISTINCT CAST(doc_id AS VARCHAR) AS k FROM documents
-        |), h AS (
-        |  SELECT k,
-        |    list_sum([CAST(round(pow(16, 7 - j)) AS BIGINT) *
-        |      (strpos('0123456789abcdef', substr(md5(k), j + 1, 1)) - 1)
-        |      for j in range(0, 8)]) AS bucket,
-        |    CAST(substr(list_max([md5('n' || CAST(i AS VARCHAR) || ':'
-        |        || k) || '#' || lpad(CAST(i AS VARCHAR), 2, '0')
-        |      for i in range(0, 8)]), 34, 2) AS INT) AS h0,
-        |    CAST(substr(list_max([md5('n' || CAST(i AS VARCHAR) || ':'
-        |        || k) || '#' || lpad(CAST(i AS VARCHAR), 2, '0')
-        |      for i in range(0, 9)]), 34, 2) AS INT) AS h1
-        |  FROM k
-        |), a AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_keys,
-        |    CAST(sum(CASE WHEN bucket % 8 <> bucket % 9 THEN 1 ELSE 0
-        |      END) AS BIGINT) AS mod_m,
-        |    CAST(sum(CASE WHEN h0 <> h1 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS hrw_m
-        |  FROM h
-        |)
-        |SELECT 'hrw' AS scheme, n_keys, hrw_m AS n_moved,
-        |  round(CAST(hrw_m AS DOUBLE) / CAST(n_keys AS DOUBLE), 6)
-        |    AS moved_share
-        |FROM a
-        |UNION ALL
-        |SELECT 'mod', n_keys, mod_m,
-        |  round(CAST(mod_m AS DOUBLE) / CAST(n_keys AS DOUBLE), 6)
-        |FROM a
-        |ORDER BY scheme""".stripMargin,
-
-    // replays winnowing selection with a window-min + rightmost-tie
-    // argmax — the operator's aggregate-HOF fold has identical
-    // semantics (<= keeps the last minimum scanning left->right)
-    "q224_winnowing_pairs" -> winnowingPairsSql,
-
-    // the q77/q72 gate pattern: exact counts + boolean floors — the
-    // probabilistic structure itself is certified in-job vs brute force
-    "q228_ann_recall_sweep" ->
-      """SELECT CAST(nprobe AS INT) AS nprobe,
-        |  CAST(30 AS BIGINT) AS n_queries,
-        |  CAST(300 AS BIGINT) AS n_results,
-        |  TRUE AS recall_floor_ok, TRUE AS monotone_ok
-        |FROM (VALUES (1), (2), (4)) v(nprobe)
-        |ORDER BY nprobe""".stripMargin,
-
-    // identical merged-CDF walk: exact-integer quantile keys, pooled
-    // rows first on ties, carry-min of pooled values
-    "q230_quantile_norm" ->
-      """WITH h AS (
-        |  SELECT source AS g, n_chars AS v, CAST(count(*) AS BIGINT) AS c
-        |  FROM documents GROUP BY 1, 2
-        |), src AS (
-        |  SELECT g, v, c,
-        |    sum(c) OVER (PARTITION BY g ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(c) OVER (PARTITION BY g) AS n_g
-        |  FROM h
-        |), hp AS (
-        |  SELECT n_chars AS pv, CAST(count(*) AS BIGINT) AS pc
-        |  FROM documents GROUP BY 1
-        |), pool AS (
-        |  SELECT pv,
-        |    sum(pc) OVER (ORDER BY pv
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pcum,
-        |    (SELECT sum(pc) FROM hp) AS n_pool
-        |  FROM hp
-        |), rep AS (
-        |  SELECT g2.g, 0 AS tag, pcum * g2.n_g AS ukey, pv,
-        |    CAST(NULL AS BIGINT) AS v, CAST(NULL AS BIGINT) AS c
-        |  FROM pool, (SELECT DISTINCT g, n_g FROM src) g2
-        |  UNION ALL
-        |  SELECT g, 1, cum * (SELECT n_pool FROM pool LIMIT 1), NULL,
-        |    v, c
-        |  FROM src
-        |), walk AS (
-        |  SELECT g, tag, v, c,
-        |    min(CASE WHEN tag = 0 THEN pv END) OVER (PARTITION BY g
-        |      ORDER BY ukey DESC, tag ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS qnorm_v
-        |  FROM rep
-        |)
-        |SELECT g AS source, v, c AS n_rows, qnorm_v
-        |FROM walk WHERE tag = 1 ORDER BY source, v""".stripMargin,
-
-    "q231_target_encoding" ->
-      """WITH g AS (
-        |  SELECT source, CAST(sum(n_chars) AS BIGINT) AS s,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY 1
-        |), t AS (
-        |  SELECT CAST(sum(n_chars) AS BIGINT) AS ts,
-        |    CAST(count(*) AS BIGINT) AS tn
-        |  FROM documents
-        |)
-        |SELECT doc_id, d.source, n_chars AS y,
-        |  round(CAST((g.s - d.n_chars) * t.tn + 10 * t.ts AS DOUBLE)
-        |    / CAST((g.n - 1 + 10) * t.tn AS DOUBLE), 6) AS loo_enc
-        |FROM documents d JOIN g USING (source), t
-        |ORDER BY doc_id""".stripMargin,
-
-    "q232_heldout_xent" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, $toksSql AS tk,
-         |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c' AS is_train
-         |  FROM documents
-         |), tr AS (SELECT doc_id, tk FROM base WHERE is_train
-         |), te AS (SELECT doc_id, tk FROM base WHERE NOT is_train
-         |), bit AS (
-         |  SELECT doc_id, tk[CAST(i + 1 AS INT)] AS w1,
-         |    tk[CAST(i + 2 AS INT)] AS w2
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(range(0, greatest(len(tk) - 1, 0))) AS i
-         |        FROM tr)
-         |), tft AS (
-         |  SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS tf
-         |  FROM bit GROUP BY 1, 2, 3
-         |), c2 AS (
-         |  SELECT w1, w2, CAST(SUM(tf) AS BIGINT) AS c2
-         |  FROM tft GROUP BY 1, 2
-         |), c1 AS (
-         |  SELECT w1, CAST(SUM(tf) AS BIGINT) AS c1 FROM tft GROUP BY 1
-         |), v AS (
-         |  SELECT CAST(COUNT(DISTINCT t) AS DOUBLE) AS vs
-         |  FROM (SELECT unnest(tk) AS t FROM tr)
-         |), bie AS (
-         |  SELECT doc_id, tk[CAST(i + 1 AS INT)] AS w1,
-         |    tk[CAST(i + 2 AS INT)] AS w2
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(range(0, greatest(len(tk) - 1, 0))) AS i
-         |        FROM te)
-         |), tfe AS (
-         |  SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS tf
-         |  FROM bie GROUP BY 1, 2, 3
-         |), sc AS (
-         |  SELECT doc_id, tf,
-         |    ln((CAST(coalesce(c2, 0) AS DOUBLE) + 1.0)
-         |      / (CAST(coalesce(c1, 0) AS DOUBLE) + 1.0 * vs)) AS lp
-         |  FROM tfe LEFT JOIN c2 USING (w1, w2)
-         |  LEFT JOIN c1 USING (w1), v
-         |), agg AS (
-         |  SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-         |    round(-CAST(SUM(CAST(CAST(tf AS DOUBLE) * lp
-         |        AS DECIMAL(38,6))) AS DOUBLE)
-         |      / CAST(SUM(tf) AS DOUBLE), 6) AS cross_entropy
-         |  FROM sc GROUP BY doc_id
-         |)
-         |SELECT d.doc_id, COALESCE(a.n_bigrams, 0) AS n_bigrams,
-         |  COALESCE(a.cross_entropy, 0.0) AS cross_entropy
-         |FROM te d LEFT JOIN agg a USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    "q233_simpson_audit" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(hour(ts) AS BIGINT) AS x,
-        |    CAST(floor(value * 100) AS BIGINT) AS y
-        |  FROM events
-        |), one AS (
-        |  SELECT event_type AS grp, CAST(COUNT(*) AS BIGINT) AS n,
-        |    SUM(CAST(x AS DECIMAL(19,6))) AS sx,
-        |    SUM(CAST(y AS DECIMAL(19,6))) AS sy,
-        |    SUM(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6)))
-        |      AS sxx,
-        |    SUM(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6)))
-        |      AS sxy
-        |  FROM e GROUP BY 1
-        |), seg AS (
-        |  SELECT grp, n,
-        |    round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6)
-        |      AS slope_seg
-        |  FROM one
-        |), onep AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    SUM(CAST(x AS DECIMAL(19,6))) AS sx,
-        |    SUM(CAST(y AS DECIMAL(19,6))) AS sy,
-        |    SUM(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6)))
-        |      AS sxx,
-        |    SUM(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6)))
-        |      AS sxy
-        |  FROM e
-        |), pool AS (
-        |  SELECT round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6)
-        |      AS slope_pool
-        |  FROM onep
-        |)
-        |SELECT grp AS segment, n, slope_seg, slope_pool,
-        |  (slope_seg * slope_pool < 0) AS sign_flip,
-        |  round(slope_seg - slope_pool, 6) AS slope_delta
-        |FROM seg, pool ORDER BY segment""".stripMargin,
-
-    "q234_burrows_delta" ->
-      s"""WITH tok AS (
-         |  SELECT source, unnest($toksSql) AS w
-         |  FROM documents
-         |), top AS (
-         |  SELECT w FROM tok GROUP BY w
-         |  ORDER BY count(*) DESC, w LIMIT 30
-         |), ns AS (
-         |  SELECT source, CAST(count(*) AS BIGINT) AS nt
-         |  FROM tok GROUP BY 1
-         |), cnt AS (
-         |  SELECT source, w, CAST(count(*) AS BIGINT) AS cw
-         |  FROM tok JOIN top USING (w) GROUP BY 1, 2
-         |), grid AS (
-         |  SELECT ns.source, ns.nt, top.w FROM ns, top
-         |), dense AS (
-         |  SELECT g.source, g.w,
-         |    CAST(round(CAST(coalesce(cnt.cw, 0) AS DOUBLE)
-         |      / CAST(g.nt AS DOUBLE), 9) AS DECIMAL(18,9)) AS f9
-         |  FROM grid g LEFT JOIN cnt USING (source, w)
-         |), st AS (
-         |  SELECT w, CAST(count(*) AS BIGINT) AS nsrc,
-         |    SUM(f9) AS s1,
-         |    SUM(CAST(f9 * f9 AS DECIMAL(38,18))) AS s2
-         |  FROM dense GROUP BY 1
-         |), z AS (
-         |  SELECT d.source, d.w,
-         |    (CAST(nsrc AS DOUBLE) * CAST(f9 AS DOUBLE)
-         |      - CAST(s1 AS DOUBLE))
-         |      / sqrt(CAST(nsrc AS DOUBLE) * CAST(s2 AS DOUBLE)
-         |        - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)) AS z
-         |  FROM dense d JOIN st USING (w)
-         |  WHERE CAST(nsrc AS DOUBLE) * CAST(s2 AS DOUBLE)
-         |    - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) > 0
-         |)
-         |SELECT a.source AS source_a, b.source AS source_b,
-         |  CAST(count(*) AS BIGINT) AS n_markers,
-         |  round(CAST(SUM(CAST(round(abs(a.z - b.z), 9)
-         |      AS DECIMAL(38,9))) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE), 6) AS delta
-         |FROM z a JOIN z b ON a.w = b.w AND a.source < b.source
-         |GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin,
-
-    "q235_emd_drift" ->
-      """WITH e AS (
-        |  SELECT event_type AS g, CAST(floor(value * 100) AS BIGINT) AS v,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN 1 ELSE 0 END AS is_ref
-        |  FROM events
-        |), h AS MATERIALIZED (
-        |  SELECT g, v, CAST(SUM(is_ref) AS BIGINT) AS ca,
-        |    CAST(SUM(1 - is_ref) AS BIGINT) AS cb
-        |  FROM e GROUP BY 1, 2
-        |), w AS (
-        |  SELECT g, v, ca, cb,
-        |    SUM(ca) OVER (PARTITION BY g ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuma,
-        |    SUM(cb) OVER (PARTITION BY g ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumb,
-        |    SUM(ca) OVER (PARTITION BY g) AS na,
-        |    SUM(cb) OVER (PARTITION BY g) AS nb,
-        |    lead(v) OVER (PARTITION BY g ORDER BY v) AS nv
-        |  FROM h
-        |), terms AS (
-        |  SELECT g, na, nb,
-        |    abs(cuma * nb - cumb * na) * (nv - v) AS term
-        |  FROM w
-        |  WHERE nv IS NOT NULL AND na > 0 AND nb > 0
-        |)
-        |SELECT g, CAST(na AS BIGINT) AS n_ref, CAST(nb AS BIGINT) AS n_cur,
-        |  round(CAST(SUM(term) AS DOUBLE)
-        |    / CAST(na * nb * 100 AS DOUBLE), 6) AS emd
-        |FROM terms GROUP BY g, na, nb ORDER BY g""".stripMargin,
-
-    "q236_assortativity" ->
-      """WITH e0 AS MATERIALIZED (
-        |  SELECT a.l_partkey AS u, b.l_partkey AS v
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey
-        |    AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), deg AS (
-        |  SELECT n AS node, CAST(count(*) AS BIGINT) AS d
-        |  FROM (SELECT u AS n FROM e0 UNION ALL SELECT v FROM e0)
-        |  GROUP BY 1
-        |), ends AS (
-        |  SELECT du.d AS du, dv.d AS dv
-        |  FROM e0 JOIN deg du ON e0.u = du.node
-        |  JOIN deg dv ON e0.v = dv.node
-        |), sym AS (
-        |  SELECT du AS x, dv AS y FROM ends
-        |  UNION ALL SELECT dv, du FROM ends
-        |), agg AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_ends,
-        |    SUM(CAST(x AS DECIMAL(38,0))) AS sx,
-        |    SUM(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-        |    SUM(CAST(x * y AS DECIMAL(38,0))) AS sxy
-        |  FROM sym
-        |)
-        |SELECT CAST(n_ends // 2 AS BIGINT) AS n_edges,
-        |  round(CAST(sx AS DOUBLE) / CAST(n_ends AS DOUBLE), 6)
-        |    AS mean_end_degree,
-        |  CASE WHEN CAST(n_ends AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0 THEN NULL
-        |    ELSE round((CAST(n_ends AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |      / (CAST(n_ends AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6) END
-        |    AS assortativity
-        |FROM agg""".stripMargin,
-
-    // unrolled 5-round greedy (the q199 pattern): each round excludes
-    // the picked set and scores max-sim against it via the symmetric
-    // bounded pair table
-    "q237_mmr_rerank" -> {
-      val rounds = (2 to 5).map { i =>
-        s""", s$i AS (
-           |  SELECT c.doc_id, c.score,
-           |    coalesce((SELECT max(sim) FROM sims2 s
-           |      WHERE s.a = c.doc_id
-           |        AND s.b IN (SELECT doc_id FROM pk${i - 1})), 0.0) AS ms
-           |  FROM cand c
-           |  WHERE c.doc_id NOT IN (SELECT doc_id FROM pk${i - 1})
-           |), p$i AS (
-           |  SELECT doc_id, score, ms, 0.7 * score - 0.3 * ms AS mmr
-           |  FROM s$i ORDER BY mmr DESC, doc_id LIMIT 1
-           |), pk$i AS (
-           |  SELECT doc_id FROM pk${i - 1}
-           |  UNION ALL SELECT doc_id FROM p$i
-           |)""".stripMargin
-      }.mkString
-      val out = (1 to 5).map { i =>
-        s"""SELECT $i AS rk, doc_id, score, round(ms, 6) AS max_sim,
-           |  round(mmr, 6) AS mmr FROM p$i""".stripMargin
-      }.mkString("\n", "\nUNION ALL\n", "\n")
-      s"""WITH cand AS MATERIALIZED (
-         |${bm25Sql("'spark', 'join', 'window'", 20)}
-         |), shd AS (
-         |  SELECT d.doc_id,
-         |    list_distinct(CASE WHEN len(list_filter(
-         |        regexp_split_to_array(d.text, '\\s+'), x -> x <> '')) < 3
-         |      THEN [array_to_string(list_filter(
-         |        regexp_split_to_array(d.text, '\\s+'), x -> x <> ''), ' ')]
-         |      ELSE [array_to_string(list_filter(
-         |          regexp_split_to_array(d.text, '\\s+'),
-         |          x -> x <> '')[i+1:i+3], ' ')
-         |        for i in range(0, len(list_filter(
-         |          regexp_split_to_array(d.text, '\\s+'),
-         |          x -> x <> '')) - 2)] END) AS sh
-         |  FROM documents d JOIN cand USING (doc_id)
-         |), ex AS (SELECT doc_id, unnest(sh) AS s1 FROM shd
-         |), inter AS (
-         |  SELECT a.doc_id AS a, b.doc_id AS b,
-         |    CAST(count(*) AS BIGINT) AS i
-         |  FROM ex a JOIN ex b ON a.s1 = b.s1 AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2
-         |), szs AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM shd
-         |), sims AS (
-         |  SELECT a, b, round(CAST(i AS DOUBLE)
-         |    / CAST(na.n + nb.n - i AS DOUBLE), 9) AS sim
-         |  FROM inter JOIN szs na ON na.doc_id = a
-         |  JOIN szs nb ON nb.doc_id = b
-         |), sims2 AS MATERIALIZED (
-         |  SELECT a, b, sim FROM sims
-         |  UNION ALL SELECT b, a, sim FROM sims
-         |), p1 AS (
-         |  SELECT doc_id, score, 0.0 AS ms,
-         |    0.7 * score - 0.3 * 0.0 AS mmr
-         |  FROM cand ORDER BY mmr DESC, doc_id LIMIT 1
-         |), pk1 AS (SELECT doc_id FROM p1)$rounds
-         |SELECT * FROM ($out) ORDER BY rk""".stripMargin
-    },
-
-    "q238_markov_eval" ->
-      """WITH st AS (
-        |  SELECT event_type AS e1,
-        |    substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < 'c' AS tr,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS e2
-        |  FROM events
-        |), s2 AS (SELECT * FROM st WHERE e2 IS NOT NULL
-        |), cnt AS (
-        |  SELECT e1, e2, count(*) AS c FROM s2 WHERE tr GROUP BY 1, 2
-        |), mx AS (SELECT e1, max(c) AS mc FROM cnt GROUP BY 1
-        |), pred AS (
-        |  SELECT e1, min(e2) AS predicted FROM cnt JOIN mx USING (e1)
-        |  WHERE c = mc GROUP BY 1
-        |), ev AS (
-        |  SELECT e1, e2, CAST(count(*) AS BIGINT) AS n
-        |  FROM s2 WHERE NOT tr GROUP BY 1, 2
-        |)
-        |SELECT ev.e1, coalesce(pred.predicted, 'none') AS predicted,
-        |  CAST(sum(n) AS BIGINT) AS n_eval,
-        |  CAST(sum(CASE WHEN ev.e2 = pred.predicted THEN n ELSE 0 END)
-        |    AS BIGINT) AS n_correct,
-        |  round(CAST(sum(CASE WHEN ev.e2 = pred.predicted
-        |      THEN n ELSE 0 END) AS DOUBLE)
-        |    / CAST(sum(n) AS DOUBLE), 6) AS accuracy
-        |FROM ev LEFT JOIN pred USING (e1)
-        |GROUP BY 1, 2 ORDER BY e1""".stripMargin,
-
-    "q239_mutual_info" ->
-      """WITH base AS (
-        |  SELECT (lang = 'en') AS good,
-        |    least(n_chars // 100, 5) AS len_bin,
-        |    least(greatest((n_chars * 10)
-        |      // greatest(len(list_filter(regexp_split_to_array(text,
-        |            '\s+'), x -> x <> '')), 1) - 50, 0), 9) AS wordlen_bin
-        |  FROM documents
-        |), rows_ AS (
-        |  SELECT 'len_bin' AS feature, len_bin AS bin, good FROM base
-        |  UNION ALL
-        |  SELECT 'wordlen_bin', wordlen_bin, good FROM base
-        |), c3 AS (
-        |  SELECT feature, bin, good, CAST(count(*) AS BIGINT) AS nbc
-        |  FROM rows_ GROUP BY 1, 2, 3
-        |), nb AS (
-        |  SELECT feature, bin, CAST(sum(nbc) AS BIGINT) AS nb
-        |  FROM c3 GROUP BY 1, 2
-        |), nc AS (
-        |  SELECT feature, good, CAST(sum(nbc) AS BIGINT) AS nc
-        |  FROM c3 GROUP BY 1, 2
-        |), nt AS (
-        |  SELECT feature, CAST(sum(nbc) AS BIGINT) AS nt
-        |  FROM c3 GROUP BY 1
-        |), mi AS (
-        |  SELECT feature,
-        |    round(CAST(sum(CAST(round(
-        |      (CAST(nbc AS DOUBLE) / CAST(nt AS DOUBLE))
-        |        * ln(CAST(nt * nbc AS DOUBLE)
-        |          / CAST(nb * nc AS DOUBLE)), 9) AS DECIMAL(38,9)))
-        |      AS DOUBLE), 6) AS mi
-        |  FROM c3 JOIN nb USING (feature, bin)
-        |  JOIN nc USING (feature, good) JOIN nt USING (feature)
-        |  GROUP BY 1
-        |), hl AS (
-        |  SELECT feature,
-        |    round(-CAST(sum(CAST(round(
-        |      (CAST(nc AS DOUBLE) / CAST(nt AS DOUBLE))
-        |        * ln(CAST(nc AS DOUBLE) / CAST(nt AS DOUBLE)), 9)
-        |      AS DECIMAL(38,9))) AS DOUBLE), 6) AS h_label
-        |  FROM nc JOIN nt USING (feature) GROUP BY 1
-        |)
-        |SELECT feature, mi, h_label, round(mi / h_label, 6) AS ig_ratio
-        |FROM mi JOIN hl USING (feature)
-        |ORDER BY feature""".stripMargin,
-
-    "q240_cuped" ->
-      """WITH b AS (
-        |  SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS mid
-        |  FROM events
-        |), units AS (
-        |  SELECT user_id,
-        |    CAST(coalesce(sum(CASE WHEN epoch_us(ts) < mid
-        |        THEN CAST(value AS DECIMAL(19,6)) END),
-        |      CAST(0 AS DECIMAL(19,6))) AS DOUBLE) AS x,
-        |    CAST(coalesce(sum(CASE WHEN epoch_us(ts) >= mid
-        |        THEN CAST(value AS DECIMAL(19,6)) END),
-        |      CAST(0 AS DECIMAL(19,6))) AS DOUBLE) AS y
-        |  FROM events, b GROUP BY user_id
-        |), u2 AS (
-        |  SELECT x, y,
-        |    CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |      THEN 'A' ELSE 'B' END AS arm
-        |  FROM units
-        |), pa AS (
-        |  SELECT arm, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(x AS DECIMAL(19,6))) AS sx,
-        |    sum(CAST(y AS DECIMAL(19,6))) AS sy,
-        |    sum(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6)))
-        |      AS sxx,
-        |    sum(CAST(y AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6)))
-        |      AS syy,
-        |    sum(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6)))
-        |      AS sxy
-        |  FROM u2 GROUP BY 1
-        |), g AS (
-        |  SELECT CAST(sum(n) AS DOUBLE) AS gn,
-        |    CAST(sum(sx) AS DOUBLE) AS gsx,
-        |    CAST(sum(sy) AS DOUBLE) AS gsy,
-        |    CAST(sum(sxx) AS DOUBLE) AS gsxx,
-        |    CAST(sum(sxy) AS DOUBLE) AS gsxy
-        |  FROM pa
-        |), k AS (
-        |  SELECT arm, n, CAST(n AS DOUBLE) AS nd,
-        |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-        |    CAST(sxx AS DOUBLE) AS sxxd, CAST(syy AS DOUBLE) AS syyd,
-        |    CAST(sxy AS DOUBLE) AS sxyd,
-        |    (gn * gsxy - gsx * gsy) / (gn * gsxx - gsx * gsx) AS theta,
-        |    gsx / gn AS xbar
-        |  FROM pa, g
-        |), r AS (
-        |  SELECT arm, n, theta, xbar,
-        |    syd / nd AS mean_y, sxd / nd AS mean_x,
-        |    (nd * syyd - syd * syd) / (nd * (nd - 1.0)) AS var_y,
-        |    (nd * sxxd - sxd * sxd) / (nd * (nd - 1.0)) AS var_x,
-        |    (nd * sxyd - sxd * syd) / (nd * (nd - 1.0)) AS cov_xy
-        |  FROM k
-        |)
-        |SELECT arm, n, round(mean_y, 6) AS mean_y,
-        |  round(mean_y - theta * (mean_x - xbar), 6) AS mean_cuped,
-        |  round(var_y, 6) AS var_y,
-        |  round(var_y - 2.0 * theta * cov_xy + theta * theta * var_x, 6)
-        |    AS var_cuped,
-        |  round(theta, 6) AS theta,
-        |  round(1.0 - (var_y - 2.0 * theta * cov_xy
-        |      + theta * theta * var_x) / var_y, 6) AS var_reduction
-        |FROM r ORDER BY arm""".stripMargin,
-
-    "q241_did" ->
-      """WITH b AS (
-        |  SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS mid
-        |  FROM events
-        |), base AS (
-        |  SELECT event_type,
-        |    substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8' AS tr,
-        |    epoch_us(ts) >= mid AS post,
-        |    CAST(value AS DECIMAL(19,6)) AS v
-        |  FROM events, b
-        |), cells AS (
-        |  SELECT event_type,
-        |    sum(CASE WHEN tr AND NOT post THEN v END) AS s_t_pre,
-        |    CAST(sum(CASE WHEN tr AND NOT post THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_t_pre,
-        |    sum(CASE WHEN tr AND post THEN v END) AS s_t_post,
-        |    CAST(sum(CASE WHEN tr AND post THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_t_post,
-        |    sum(CASE WHEN NOT tr AND NOT post THEN v END) AS s_c_pre,
-        |    CAST(sum(CASE WHEN NOT tr AND NOT post THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_c_pre,
-        |    sum(CASE WHEN NOT tr AND post THEN v END) AS s_c_post,
-        |    CAST(sum(CASE WHEN NOT tr AND post THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_c_post
-        |  FROM base GROUP BY 1
-        |)
-        |SELECT event_type, n_t_pre, n_t_post, n_c_pre, n_c_post,
-        |  round(CAST(s_t_pre AS DOUBLE) / CAST(n_t_pre AS DOUBLE), 6)
-        |    AS m_t_pre,
-        |  round(CAST(s_t_post AS DOUBLE) / CAST(n_t_post AS DOUBLE), 6)
-        |    AS m_t_post,
-        |  round(CAST(s_c_pre AS DOUBLE) / CAST(n_c_pre AS DOUBLE), 6)
-        |    AS m_c_pre,
-        |  round(CAST(s_c_post AS DOUBLE) / CAST(n_c_post AS DOUBLE), 6)
-        |    AS m_c_post,
-        |  round((CAST(s_t_post AS DOUBLE) / CAST(n_t_post AS DOUBLE)
-        |      - CAST(s_t_pre AS DOUBLE) / CAST(n_t_pre AS DOUBLE))
-        |    - (CAST(s_c_post AS DOUBLE) / CAST(n_c_post AS DOUBLE)
-        |      - CAST(s_c_pre AS DOUBLE) / CAST(n_c_pre AS DOUBLE)), 6)
-        |    AS did
-        |FROM cells ORDER BY event_type""".stripMargin,
-
-    "q242_cem" ->
-      """WITH b AS (
-        |  SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS mid
-        |  FROM events
-        |), units AS (
-        |  SELECT user_id,
-        |    CAST(sum(CASE WHEN epoch_us(ts) < mid THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_pre,
-        |    coalesce(sum(CASE WHEN epoch_us(ts) < mid
-        |        THEN CAST(value AS DECIMAL(19,6)) END),
-        |      CAST(0 AS DECIMAL(19,6))) AS v_pre,
-        |    max(CASE WHEN epoch_us(ts) >= mid
-        |        AND event_type = 'purchase' AND value >= 200
-        |      THEN 1 ELSE 0 END) AS y
-        |  FROM events, b GROUP BY 1
-        |), u2 AS (
-        |  SELECT substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |      AS treated,
-        |    CAST(least(n_pre // 10, 5) AS BIGINT) AS bin_n,
-        |    CAST(least(CAST(floor(v_pre) AS BIGINT) // 500, 5)
-        |      AS BIGINT) AS bin_v,
-        |    y
-        |  FROM units
-        |), cells AS (
-        |  SELECT bin_n, bin_v,
-        |    CAST(sum(CASE WHEN treated THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_t,
-        |    CAST(sum(CASE WHEN NOT treated THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_c,
-        |    CAST(sum(CASE WHEN treated THEN y ELSE 0 END) AS BIGINT)
-        |      AS c_t,
-        |    CAST(sum(CASE WHEN NOT treated THEN y ELSE 0 END) AS BIGINT)
-        |      AS c_c
-        |  FROM u2 GROUP BY 1, 2
-        |), att AS (
-        |  SELECT CAST(sum(CAST(round(CAST(n_t AS DOUBLE)
-        |        * (CAST(c_t AS DOUBLE) / CAST(n_t AS DOUBLE)
-        |          - CAST(c_c AS DOUBLE) / CAST(n_c AS DOUBLE)), 9)
-        |      AS DECIMAL(38,9))) AS DOUBLE)
-        |    / CAST(sum(n_t) AS DOUBLE) AS att_raw
-        |  FROM cells WHERE n_t > 0 AND n_c > 0
-        |)
-        |SELECT bin_n, bin_v, n_t, n_c,
-        |  CASE WHEN n_t > 0 THEN round(CAST(c_t AS DOUBLE)
-        |    / CAST(n_t AS DOUBLE), 6) END AS mean_t,
-        |  CASE WHEN n_c > 0 THEN round(CAST(c_c AS DOUBLE)
-        |    / CAST(n_c AS DOUBLE), 6) END AS mean_c,
-        |  CASE WHEN n_t > 0 AND n_c > 0
-        |    THEN round(CAST(c_t AS DOUBLE) / CAST(n_t AS DOUBLE)
-        |      - CAST(c_c AS DOUBLE) / CAST(n_c AS DOUBLE), 6)
-        |    END AS diff,
-        |  (n_t > 0 AND n_c > 0) AS matched,
-        |  round(att_raw, 6) AS att
-        |FROM cells, att ORDER BY bin_n, bin_v""".stripMargin,
-
-    "q243_jackknife" ->
-      """WITH units AS (
-        |  SELECT user_id, sum(CAST(value AS DECIMAL(19,6))) AS rev,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1
-        |), per AS (
-        |  SELECT list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |      (strpos('0123456789abcdef',
-        |        substr(md5(CAST(user_id AS VARCHAR)), i + 1, 1)) - 1)
-        |      for i in range(0, 8)]) % 32 AS bucket,
-        |    sum(CAST(rev AS DECIMAL(19,6))) AS nv,
-        |    sum(CAST(cnt AS DECIMAL(19,6))) AS dv
-        |  FROM units GROUP BY 1
-        |), tot AS (
-        |  SELECT sum(nv) AS tn, sum(dv) AS td,
-        |    CAST(count(*) AS BIGINT) AS nb
-        |  FROM per
-        |), loo AS (
-        |  SELECT nb, tn, td,
-        |    CAST(round(CAST(tn - nv AS DOUBLE)
-        |        / CAST(td - dv AS DOUBLE), 9) AS DECIMAL(38,9)) AS loo
-        |  FROM per, tot
-        |), m AS (
-        |  SELECT nb, tn, td, sum(loo) AS sl FROM loo GROUP BY 1, 2, 3
-        |), sq AS (
-        |  SELECT l.nb, l.tn, l.td,
-        |    sum(CAST(round((CAST(l.loo AS DOUBLE)
-        |          - CAST(m.sl AS DOUBLE) / CAST(l.nb AS DOUBLE))
-        |        * (CAST(l.loo AS DOUBLE)
-        |          - CAST(m.sl AS DOUBLE) / CAST(l.nb AS DOUBLE)), 12)
-        |      AS DECIMAL(38,12))) AS sq
-        |  FROM loo l JOIN m ON m.nb = l.nb GROUP BY 1, 2, 3
-        |)
-        |SELECT CAST(nb AS BIGINT) AS b,
-        |  round(CAST(tn AS DOUBLE) / CAST(td AS DOUBLE), 6) AS theta,
-        |  round(sqrt(((CAST(nb AS DOUBLE) - 1.0) / CAST(nb AS DOUBLE))
-        |    * CAST(sq AS DOUBLE)), 6) AS se_jack,
-        |  round(CAST(tn AS DOUBLE) / CAST(td AS DOUBLE)
-        |    - 1.96 * sqrt(((CAST(nb AS DOUBLE) - 1.0)
-        |        / CAST(nb AS DOUBLE)) * CAST(sq AS DOUBLE)), 6)
-        |    AS ci_lo,
-        |  round(CAST(tn AS DOUBLE) / CAST(td AS DOUBLE)
-        |    + 1.96 * sqrt(((CAST(nb AS DOUBLE) - 1.0)
-        |        / CAST(nb AS DOUBLE)) * CAST(sq AS DOUBLE)), 6)
-        |    AS ci_hi
-        |FROM sq""".stripMargin,
-
-    "q244_fdr_bh" ->
-      """WITH base AS (
-        |  SELECT event_type, CAST(hour(ts) // 4 AS BIGINT) AS hb,
-        |    substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8' AS a,
-        |    value >= 100 AS hit
-        |  FROM events
-        |), cells AS (
-        |  SELECT event_type, hb,
-        |    CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |    CAST(sum(CASE WHEN NOT a THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_b,
-        |    CAST(sum(CASE WHEN a AND hit THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS x_a,
-        |    CAST(sum(CASE WHEN NOT a AND hit THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS x_b
-        |  FROM base GROUP BY 1, 2
-        |), tested AS (
-        |  SELECT event_type, hb, n_a, n_b, x_a, x_b,
-        |    (CAST(x_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-        |      - CAST(x_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-        |    / sqrt(CAST(x_a + x_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)
-        |      * (1.0 - CAST(x_a + x_b AS DOUBLE)
-        |        / CAST(n_a + n_b AS DOUBLE))
-        |      * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
-        |      AS zr
-        |  FROM cells
-        |  WHERE n_a > 0 AND n_b > 0 AND x_a + x_b > 0
-        |    AND x_a + x_b < n_a + n_b
-        |), pv0 AS (
-        |  SELECT *, abs(zr) AS az,
-        |    1.0 / (1.0 + 0.2316419 * abs(zr)) AS tt
-        |  FROM tested
-        |), pv AS (
-        |  SELECT event_type, hb, n_a, n_b, x_a, x_b, round(zr, 6) AS z,
-        |    round(2.0 * (0.3989422804014327 * exp(-0.5 * az * az))
-        |      * (tt * (0.319381530 + tt * (-0.356563782
-        |        + tt * (1.781477937 + tt * (-1.821255978
-        |          + tt * 1.330274429))))), 9) AS p_value
-        |  FROM pv0
-        |), ranked AS (
-        |  SELECT *, CAST(row_number()
-        |    OVER (ORDER BY p_value, event_type, hb) AS INTEGER) AS rank
-        |  FROM pv
-        |), mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM ranked
-        |), fl AS (
-        |  SELECT r.*, (p_value <= CAST(rank AS DOUBLE) * 0.1
-        |    / CAST(m AS DOUBLE)) AS flag
-        |  FROM ranked r, mm
-        |), kk AS (SELECT max(CASE WHEN flag THEN rank END) AS k FROM fl)
-        |SELECT event_type, hb, n_a, n_b, x_a, x_b, z, p_value, rank,
-        |  rank <= coalesce(k, 0) AS rejected
-        |FROM fl, kk ORDER BY rank""".stripMargin,
-
-    "q245_conformal" ->
-      """WITH hist AS (
-        |  SELECT event_type,
-        |    CASE WHEN substr(md5(CAST(event_id AS VARCHAR)), 1, 1) < '6'
-        |      THEN 'train'
-        |      WHEN substr(md5(CAST(event_id AS VARCHAR)), 1, 1) < 'b'
-        |      THEN 'cal' ELSE 'test' END AS split,
-        |    CAST(round(value * 100) AS BIGINT) AS vc,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2, 3
-        |), pred AS (
-        |  SELECT event_type,
-        |    (2 * sum(vc * cnt) + sum(cnt)) // (2 * sum(cnt)) AS pred_c,
-        |    CAST(sum(cnt) AS BIGINT) AS n_train
-        |  FROM hist WHERE split = 'train' GROUP BY 1
-        |), cal AS (
-        |  SELECT h.event_type, abs(vc - pred_c) AS r,
-        |    CAST(sum(cnt) AS BIGINT) AS cnt
-        |  FROM hist h JOIN pred USING (event_type) WHERE split = 'cal'
-        |  GROUP BY 1, 2
-        |), ncal AS (
-        |  SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n_cal,
-        |    (9 * sum(cnt) + 18) // 10 AS k
-        |  FROM cal GROUP BY 1
-        |), qh AS (
-        |  SELECT c.event_type, n_cal, min(r) AS qhat_c
-        |  FROM (SELECT event_type, r, sum(cnt)
-        |      OVER (PARTITION BY event_type ORDER BY r) AS cum
-        |    FROM cal) c
-        |  JOIN ncal USING (event_type)
-        |  WHERE cum >= k GROUP BY 1, 2
-        |), res AS (
-        |  SELECT h.event_type, n_train, n_cal, pred_c, qhat_c,
-        |    CAST(sum(cnt) AS BIGINT) AS n_test,
-        |    CAST(sum(CASE WHEN abs(vc - pred_c) <= qhat_c
-        |      THEN cnt ELSE 0 END) AS BIGINT) AS n_covered
-        |  FROM hist h JOIN pred USING (event_type)
-        |  JOIN qh USING (event_type)
-        |  WHERE split = 'test' GROUP BY 1, 2, 3, 4, 5
-        |)
-        |SELECT event_type, n_train, n_cal, n_test,
-        |  CAST(pred_c AS DOUBLE) / 100.0 AS pred,
-        |  CAST(qhat_c AS DOUBLE) / 100.0 AS qhat,
-        |  n_covered,
-        |  round(CAST(n_covered AS DOUBLE) / CAST(n_test AS DOUBLE), 6)
-        |    AS coverage
-        |FROM res ORDER BY event_type""".stripMargin,
-
-    "q246_isotonic" ->
-      """WITH bins AS (
-        |  SELECT CAST(least(n_chars // 50, 19) AS BIGINT) AS b,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS p
-        |  FROM documents GROUP BY 1
-        |), pre AS (
-        |  SELECT b, n, p,
-        |    sum(n) OVER (ORDER BY b) AS cn,
-        |    sum(p) OVER (ORDER BY b) AS cp
-        |  FROM bins
-        |), segs AS (
-        |  SELECT i.b AS i, round(CAST(j.cp - (i.cp - i.p) AS DOUBLE)
-        |      / CAST(j.cn - (i.cn - i.n) AS DOUBLE), 9) AS avg
-        |  FROM pre i JOIN pre j ON i.b <= j.b
-        |), mins AS (SELECT i, min(avg) AS mi FROM segs GROUP BY 1
-        |), iso AS (
-        |  SELECT p2.b, max(m.mi) AS iso_raw
-        |  FROM pre p2 JOIN mins m ON m.i <= p2.b GROUP BY 1
-        |)
-        |SELECT pre.b AS bin, pre.n, pre.p AS pos,
-        |  round(CAST(pre.p AS DOUBLE) / CAST(pre.n AS DOUBLE), 6)
-        |    AS rate,
-        |  round(iso_raw, 6) AS iso
-        |FROM pre JOIN iso USING (b) ORDER BY bin""".stripMargin,
-
-    "q247_spearman" ->
-      """WITH cells AS (
-        |  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS vc,
-        |    CAST(hour(ts) AS BIGINT) AS hr,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2, 3
-        |), xh AS (
-        |  SELECT event_type, vc,
-        |    2 * (sum(cx) OVER (PARTITION BY event_type ORDER BY vc)
-        |      - cx) + cx + 1 AS r2x
-        |  FROM (SELECT event_type, vc, CAST(sum(cnt) AS BIGINT) AS cx
-        |        FROM cells GROUP BY 1, 2)
-        |), yh AS (
-        |  SELECT event_type, hr,
-        |    2 * (sum(cy) OVER (PARTITION BY event_type ORDER BY hr)
-        |      - cy) + cy + 1 AS r2y
-        |  FROM (SELECT event_type, hr, CAST(sum(cnt) AS BIGINT) AS cy
-        |        FROM cells GROUP BY 1, 2)
-        |), j AS (
-        |  SELECT c.event_type, c.cnt, x.r2x, y.r2y
-        |  FROM cells c
-        |  JOIN xh x ON x.event_type = c.event_type AND x.vc = c.vc
-        |  JOIN yh y ON y.event_type = c.event_type AND y.hr = c.hr
-        |), sums AS (
-        |  SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n,
-        |    sum(CAST(cnt AS HUGEINT) * CAST(r2x AS HUGEINT)) AS sx,
-        |    sum(CAST(cnt AS HUGEINT) * CAST(r2y AS HUGEINT)) AS sy,
-        |    sum(CAST(cnt AS HUGEINT) * CAST(r2x AS HUGEINT)
-        |      * CAST(r2x AS HUGEINT)) AS sxx,
-        |    sum(CAST(cnt AS HUGEINT) * CAST(r2y AS HUGEINT)
-        |      * CAST(r2y AS HUGEINT)) AS syy,
-        |    sum(CAST(cnt AS HUGEINT) * CAST(r2x AS HUGEINT)
-        |      * CAST(r2y AS HUGEINT)) AS sxy
-        |  FROM j GROUP BY 1
-        |)
-        |SELECT event_type, n,
-        |  CASE WHEN (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) = 0.0
-        |    OR (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) = 0.0
-        |    THEN NULL
-        |    ELSE round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |      * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-        |    END AS rho
-        |FROM sums ORDER BY event_type""".stripMargin,
-
-    "q248_hits" -> {
-      val iter = (k: Int) =>
-        s"""ar$k AS MATERIALIZED (
-           |  SELECT e.dst, SUM(CAST(h.h AS DECIMAL(38,20))) AS c
-           |  FROM edges e JOIN h${k - 1} h ON h.node = e.src
-           |  GROUP BY 1),
-           |an$k AS (SELECT SUM(c) AS s FROM ar$k),
-           |av$k AS MATERIALIZED (
-           |  SELECT dst AS node,
-           |    round(CAST(c AS DOUBLE) / CAST(s AS DOUBLE), 12) AS a
-           |  FROM ar$k, an$k),
-           |hr$k AS MATERIALIZED (
-           |  SELECT e.src, SUM(CAST(a.a AS DECIMAL(38,20))) AS c
-           |  FROM edges e JOIN av$k a ON a.node = e.dst
-           |  GROUP BY 1),
-           |hn$k AS (SELECT SUM(c) AS s FROM hr$k),
-           |h$k AS MATERIALIZED (
-           |  SELECT src AS node,
-           |    round(CAST(c AS DOUBLE) / CAST(s AS DOUBLE), 12) AS h
-           |  FROM hr$k, hn$k)""".stripMargin
-      s"""WITH edges AS MATERIALIZED (
-         |  SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
-         |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-         |h0 AS (SELECT DISTINCT src AS node, CAST(1.0 AS DOUBLE) AS h
-         |  FROM edges),
-         |${(1 to 4).map(iter).mkString(",\n")}
-         |SELECT node, h AS score, 'hub' AS role FROM h4
-         |UNION ALL
-         |SELECT node, a AS score, 'authority' AS role FROM av4
-         |ORDER BY role, node""".stripMargin
-    },
-
-    "q249_t_closeness" ->
-      """WITH h AS (
-        |  SELECT event_type, hour(ts) AS hb,
-        |    CAST(floor(value * 100) AS BIGINT) AS v,
-        |    CAST(count(*) AS BIGINT) AS cg
-        |  FROM events GROUP BY 1, 2, 3
-        |), gl AS (
-        |  SELECT v, CAST(sum(cg) AS BIGINT) AS call FROM h GROUP BY 1
-        |), glw AS (
-        |  SELECT v, call,
-        |    sum(call) OVER (ORDER BY v) AS cumall,
-        |    lead(v) OVER (ORDER BY v) AS nv
-        |  FROM gl
-        |), grp AS (
-        |  SELECT event_type, hb, CAST(sum(cg) AS BIGINT) AS ng
-        |  FROM h GROUP BY 1, 2
-        |), tot AS (
-        |  SELECT CAST(sum(call) AS BIGINT) AS ntot,
-        |    max(v) - min(v) AS rng FROM gl
-        |), grid AS (
-        |  SELECT g.event_type, g.hb, g.ng, w.v, w.cumall, w.nv,
-        |    coalesce(h.cg, 0) AS cg
-        |  FROM glw w CROSS JOIN grp g
-        |  LEFT JOIN h ON h.event_type = g.event_type AND h.hb = g.hb
-        |    AND h.v = w.v
-        |), terms AS (
-        |  SELECT event_type, hb, ng,
-        |    abs(CAST(sum(cg) OVER (PARTITION BY event_type, hb
-        |          ORDER BY v) AS HUGEINT) * CAST(ntot AS HUGEINT)
-        |        - CAST(cumall AS HUGEINT) * CAST(ng AS HUGEINT))
-        |      * CAST(nv - v AS HUGEINT) AS term,
-        |    ntot, rng
-        |  FROM grid, tot WHERE nv IS NOT NULL
-        |), agg AS (
-        |  SELECT event_type, hb, ng, ntot, rng, sum(term) AS st
-        |  FROM terms GROUP BY 1, 2, 3, 4, 5
-        |)
-        |SELECT event_type, hb, ng AS n,
-        |  round(CAST(st AS DOUBLE) / (CAST(ng AS DOUBLE)
-        |    * CAST(ntot AS DOUBLE) * 100.0), 6) AS emd,
-        |  round(CAST(st AS DOUBLE) / (CAST(ng AS DOUBLE)
-        |      * CAST(ntot AS DOUBLE)) / CAST(rng AS DOUBLE), 6)
-        |    AS emd_norm,
-        |  round(CAST(st AS DOUBLE) / (CAST(ng AS DOUBLE)
-        |      * CAST(ntot AS DOUBLE)) / CAST(rng AS DOUBLE), 6) > 0.02
-        |    AS t_violation
-        |FROM agg ORDER BY event_type, hb""".stripMargin,
-
-    "q250_jl_distortion" -> {
-      val values = jlSigns.zipWithIndex.flatMap { case (row, k) =>
-        row.zipWithIndex.map { case (v, j) => s"($j, $k, $v)" }
-      }.mkString(", ")
-      s"""WITH signs(j, k, s) AS (VALUES $values
-         |), pairs AS (
-         |  SELECT a.vec_id AS pid, a.embedding AS ea, b.embedding AS eb
-         |  FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
-         |  WHERE a.vec_id % 2 = 0
-         |), el AS (
-         |  SELECT pid, generate_subscripts(ea, 1) - 1 AS j,
-         |    unnest(ea) AS xa, unnest(eb) AS xb
-         |  FROM pairs
-         |), dd AS (
-         |  SELECT pid, j, CAST(xa AS DOUBLE) - CAST(xb AS DOUBLE) AS d
-         |  FROM el
-         |), orig AS (
-         |  SELECT pid, sum(CAST(d * d AS DECIMAL(38,20))) AS origsq
-         |  FROM dd GROUP BY 1
-         |), proj AS (
-         |  SELECT pid, k, sum(CAST(d * s AS DECIMAL(38,20))) AS p
-         |  FROM dd JOIN signs USING (j) GROUP BY 1, 2
-         |), psq AS (
-         |  SELECT pid, sum(CAST(CAST(p AS DOUBLE) * CAST(p AS DOUBLE)
-         |    AS DECIMAL(38,20))) AS projsq
-         |  FROM proj GROUP BY 1
-         |), rat AS (
-         |  SELECT o.pid, sqrt(CAST(projsq AS DOUBLE)
-         |    / (16.0 * CAST(origsq AS DOUBLE))) AS ratio
-         |  FROM orig o JOIN psq USING (pid)
-         |  WHERE CAST(origsq AS DOUBLE) > 0.0
-         |)
-         |SELECT CAST(least(floor(ratio * 10), 19) AS BIGINT)
-         |    AS ratio_bin,
-         |  CAST(count(*) AS BIGINT) AS n_pairs,
-         |  round(min(ratio), 6) AS min_ratio,
-         |  round(max(ratio), 6) AS max_ratio
-         |FROM rat GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    "q251_acf" ->
-      """WITH hc AS (
-        |  SELECT epoch_us(ts) // 3600000000 AS hi,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1
-        |), bounds AS (SELECT min(hi) AS mn, max(hi) AS mx FROM hc
-        |), grid0 AS (
-        |  SELECT g.hi, coalesce(y, 0) AS y
-        |  FROM (SELECT unnest(range(mn, mx + 1)) AS hi FROM bounds) g
-        |  LEFT JOIN hc ON hc.hi = g.hi
-        |), tot AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS sy
-        |  FROM grid0
-        |), grid AS (
-        |  SELECT hi, n, n * y - sy AS dev FROM grid0, tot
-        |), den AS (
-        |  SELECT sum(CAST(dev AS HUGEINT) * CAST(dev AS HUGEINT))
-        |    AS den, max(n) AS n2
-        |  FROM grid
-        |), lags AS (SELECT unnest(range(1, 25)) AS lag
-        |), nums AS (
-        |  SELECT lag, sum(CAST(g1.dev AS HUGEINT)
-        |    * CAST(g2.dev AS HUGEINT)) AS num
-        |  FROM grid g1 CROSS JOIN lags
-        |  JOIN grid g2 ON g2.hi = g1.hi + lag
-        |  GROUP BY 1
-        |), rdf AS (
-        |  SELECT lag, CAST(n2 AS DOUBLE) AS nD,
-        |    round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) AS r,
-        |    round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 9) AS r9
-        |  FROM nums, den
-        |), t2 AS (
-        |  SELECT lag, nD, r,
-        |    CAST(round((r9 * r9) / (nD - CAST(lag AS DOUBLE)), 12)
-        |      AS DECIMAL(38,12)) AS term
-        |  FROM rdf
-        |)
-        |SELECT CAST(lag AS BIGINT) AS lag, r,
-        |  round(nD * (nD + 2.0) * CAST(sum(term)
-        |    OVER (ORDER BY lag) AS DOUBLE), 6) AS q_lb
-        |FROM t2 ORDER BY lag""".stripMargin,
-
-    "q252_fellegi_sunter" -> {
-      val bits = 0 until 3
-      def prod(pref: String) = bits.map(i =>
-        s"(CASE WHEN b$i THEN $pref$i ELSE 1.0 - $pref$i END)")
-        .mkString(" * ")
-      val nw = "CAST(n AS DECIMAL(18,0)) * CAST(w AS DECIMAL(14,12))"
-      val nnw =
-        "CAST(n AS DECIMAL(18,0)) * CAST(1.0 - w AS DECIMAL(14,12))"
-      val iter = (k: Int) => {
-        val mStep = bits.map { i =>
-          s"""    round(CAST(sum(CASE WHEN b$i THEN $nw
-             |      ELSE CAST(0 AS DECIMAL(33,12)) END) AS DOUBLE)
-             |      / CAST(sum($nw) AS DOUBLE), 12) AS m$i,
-             |    round(CAST(sum(CASE WHEN b$i THEN $nnw
-             |      ELSE CAST(0 AS DECIMAL(33,12)) END) AS DOUBLE)
-             |      / CAST(sum(CAST(n AS DECIMAL(18,0)))
-             |        - sum($nw) AS DOUBLE), 12) AS u$i""".stripMargin
-        }.mkString(",\n")
-        s"""w$k AS (
-           |  SELECT pat.*, round(p * (${prod("m")})
-           |    / (p * (${prod("m")}) + (1.0 - p) * (${prod("u")})), 12)
-           |    AS w
-           |  FROM pat, s${k - 1}
-           |), s$k AS (
-           |  SELECT round(CAST(sum($nw) AS DOUBLE)
-           |      / CAST(sum(CAST(n AS DECIMAL(18,0))) AS DOUBLE), 12)
-           |      AS p,
-           |$mStep
-           |  FROM w$k
-           |)""".stripMargin
-      }
-      s"""WITH pat AS MATERIALIZED (
-         |  SELECT a.o_orderpriority = b.o_orderpriority AS b0,
-         |    a.o_orderstatus = b.o_orderstatus AS b1,
-         |    abs(a.o_totalprice - b.o_totalprice)
-         |      < 0.1 * greatest(a.o_totalprice, b.o_totalprice) AS b2,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM orders a JOIN orders b ON a.o_custkey = b.o_custkey
-         |    AND a.o_orderkey < b.o_orderkey
-         |  GROUP BY 1, 2, 3
-         |), s0 AS (SELECT 0.1 AS p, 0.9 AS m0, 0.1 AS u0, 0.9 AS m1,
-         |  0.1 AS u1, 0.9 AS m2, 0.1 AS u2),
-         |${(1 to 5).map(iter).mkString(",\n")}
-         |SELECT b0, b1, b2, n, round(p, 6) AS p_match,
-         |  round(p * (${prod("m")}) / (p * (${prod("m")})
-         |    + (1.0 - p) * (${prod("u")})), 6) AS w,
-         |  round(ln((${prod("m")}) / (${prod("u")})), 6) AS llr
-         |FROM pat, s5 ORDER BY b0, b1, b2""".stripMargin
-    },
-
-    "q253_changepoint" ->
-      """WITH hc AS (
-        |  SELECT epoch_us(ts) // 3600000000 AS hi,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1
-        |), bounds AS (SELECT min(hi) AS mn, max(hi) AS mx FROM hc
-        |), grid0 AS (
-        |  SELECT g.hi, coalesce(y, 0) AS y
-        |  FROM (SELECT unnest(range(mn, mx + 1)) AS hi FROM bounds) g
-        |  LEFT JOIN hc ON hc.hi = g.hi
-        |), tot AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS st
-        |  FROM grid0
-        |), pre AS (
-        |  SELECT hi,
-        |    CAST(row_number() OVER (ORDER BY hi) AS BIGINT) AS srow,
-        |    sum(y) OVER (ORDER BY hi) AS s1
-        |  FROM grid0
-        |), scored AS (
-        |  SELECT hi, srow, n, st, s1,
-        |    round(CAST(CAST(n * s1 - srow * st AS HUGEINT)
-        |        * CAST(n * s1 - srow * st AS HUGEINT) AS DOUBLE)
-        |      / (CAST(n AS DOUBLE) * CAST(srow AS DOUBLE)
-        |        * CAST(n - srow AS DOUBLE)), 9) AS red9
-        |  FROM pre, tot WHERE srow < n
-        |), mx AS (SELECT max(red9) AS mr FROM scored)
-        |SELECT hi AS split_hi, srow AS s_pts, n,
-        |  round(CAST(s1 AS DOUBLE) / CAST(srow AS DOUBLE), 6) AS mean1,
-        |  round(CAST(st - s1 AS DOUBLE) / CAST(n - srow AS DOUBLE), 6)
-        |    AS mean2,
-        |  round(red9, 6) AS reduction
-        |FROM scored, mx WHERE red9 = mr
-        |ORDER BY srow LIMIT 1""".stripMargin,
-
-    "q254_msprt" ->
-      """WITH base AS (
-        |  SELECT epoch_us(ts) // 86400000000 AS dy,
-        |    substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8' AS a,
-        |    CAST(value AS DECIMAL(19,6)) AS v
-        |  FROM events
-        |), daily AS (
-        |  SELECT dy,
-        |    CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS na_d,
-        |    CAST(sum(CASE WHEN NOT a THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS nb_d,
-        |    coalesce(sum(CASE WHEN a THEN v END),
-        |      CAST(0 AS DECIMAL(19,6))) AS sa_d,
-        |    coalesce(sum(CASE WHEN NOT a THEN v END),
-        |      CAST(0 AS DECIMAL(19,6))) AS sb_d,
-        |    sum(CAST(v * v AS DECIMAL(38,12))) AS svv_d
-        |  FROM base GROUP BY 1
-        |), cum AS (
-        |  SELECT dy,
-        |    sum(na_d) OVER w AS na, sum(nb_d) OVER w AS nb,
-        |    sum(sa_d) OVER w AS sa, sum(sb_d) OVER w AS sb,
-        |    sum(svv_d) OVER w AS svv
-        |  FROM daily
-        |  WINDOW w AS (ORDER BY dy
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |), calc AS (
-        |  SELECT dy, CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
-        |    CAST(sa AS DOUBLE) / CAST(na AS DOUBLE)
-        |      - CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE) AS theta,
-        |    ((CAST(na + nb AS DOUBLE) * CAST(svv AS DOUBLE)
-        |      - CAST(sa + sb AS DOUBLE) * CAST(sa + sb AS DOUBLE))
-        |     / (CAST(na + nb AS DOUBLE)
-        |       * (CAST(na + nb AS DOUBLE) - 1.0)))
-        |     * (1.0 / CAST(na AS DOUBLE) + 1.0 / CAST(nb AS DOUBLE))
-        |     AS vn
-        |  FROM cum WHERE na > 0 AND nb > 0
-        |), lamt AS (
-        |  SELECT dy, na, nb, theta,
-        |    sqrt(vn / (vn + 100.0)) * exp(theta * theta * 100.0
-        |      / (2.0 * vn * (vn + 100.0))) AS lam
-        |  FROM calc
-        |), pd AS (
-        |  SELECT dy, na, nb, round(theta, 6) AS theta,
-        |    round(lam, 6) AS lambda,
-        |    round(least(1.0, 1.0 / lam), 9) AS p_day
-        |  FROM lamt
-        |)
-        |SELECT dy, na, nb, theta, lambda,
-        |  round(min(p_day) OVER (ORDER BY dy
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
-        |    AS p_always
-        |FROM pd ORDER BY dy""".stripMargin,
-
-    "q255_doremi" ->
-      s"""WITH tf AS (
-         |  SELECT source, t AS term, CAST(count(*) AS BIGINT) AS tf
-         |  FROM (SELECT source, unnest($toksSql) AS t FROM documents)
-         |  GROUP BY 1, 2
-         |), cnt AS (
-         |  SELECT term, CAST(sum(tf) AS BIGINT) AS cnt FROM tf GROUP BY 1
-         |), tot AS (SELECT CAST(sum(tf) AS BIGINT) AS nt FROM tf
-         |), per AS (
-         |  SELECT source, CAST(sum(tf) AS BIGINT) AS n_tokens,
-         |    sum(CAST(CAST(tf AS DOUBLE) * ln(CAST(nt AS DOUBLE)
-         |      / CAST(cnt AS DOUBLE)) AS DECIMAL(38,6))) AS ssum,
-         |    max(nt) AS nt
-         |  FROM tf JOIN cnt USING (term), tot
-         |  GROUP BY 1
-         |), pooled AS (
-         |  SELECT sum(ssum) AS gsum, CAST(sum(n_tokens) AS BIGINT) AS gn
-         |  FROM per
-         |), scored AS (
-         |  SELECT source, n_tokens,
-         |    round(CAST(n_tokens AS DOUBLE) / CAST(nt AS DOUBLE), 6)
-         |      AS w0,
-         |    round(CAST(ssum AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6)
-         |      AS loss,
-         |    round(CAST(ssum AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-         |      - CAST(gsum AS DOUBLE) / CAST(gn AS DOUBLE), 6) AS excess
-         |  FROM per, pooled
-         |), e AS (
-         |  SELECT *, CAST(round(w0 * exp(0.5 * excess), 9)
-         |    AS DECIMAL(19,9)) AS e
-         |  FROM scored
-         |), norm AS (SELECT sum(e) AS z FROM e)
-         |SELECT source, n_tokens, w0, loss, excess,
-         |  round(CAST(e AS DOUBLE) / CAST(z AS DOUBLE), 6) AS w_new
-         |FROM e, norm ORDER BY source""".stripMargin,
-
-    "q256_sax_motifs" ->
-      """WITH hc AS (
-        |  SELECT epoch_us(ts) // 3600000000 AS hi,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1
-        |), bounds AS (SELECT min(hi) AS mn, max(hi) AS mx FROM hc
-        |), grid0 AS (
-        |  SELECT g.hi, coalesce(y, 0) AS y
-        |  FROM (SELECT unnest(range(mn, mx + 1)) AS hi FROM bounds) g
-        |  LEFT JOIN hc ON hc.hi = g.hi
-        |), tot AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(y) AS BIGINT) AS sy,
-        |    sum(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy
-        |  FROM grid0
-        |), seg0 AS (
-        |  SELECT (CAST(row_number() OVER (ORDER BY hi) AS BIGINT) - 1)
-        |      // 4 AS sg,
-        |    CAST(round((CAST(y AS DOUBLE)
-        |        - CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-        |      / sqrt((CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))
-        |        / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))), 9)
-        |      AS DECIMAL(19,9)) AS zq
-        |  FROM grid0, tot
-        |), seg AS (
-        |  SELECT sg, round(CAST(sum(zq) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE), 9) AS paa
-        |  FROM seg0 GROUP BY 1
-        |), symd AS (
-        |  SELECT sg, CASE WHEN paa < -0.6744897501960817 THEN 'a'
-        |    WHEN paa < 0.0 THEN 'b'
-        |    WHEN paa < 0.6744897501960817 THEN 'c' ELSE 'd' END AS s1
-        |  FROM seg
-        |), words AS (
-        |  SELECT sg, s1,
-        |    lead(s1, 1) OVER (ORDER BY sg) AS s2,
-        |    lead(s1, 2) OVER (ORDER BY sg) AS s3
-        |  FROM symd
-        |)
-        |SELECT s1 || s2 || s3 AS word, CAST(count(*) AS BIGINT) AS n,
-        |  min(sg) AS first_seg
-        |FROM words WHERE s3 IS NOT NULL
-        |GROUP BY 1 ORDER BY n DESC, word""".stripMargin,
-
-    "q257_dp_mean" ->
-      """WITH agg AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(value AS DECIMAL(19,6))) AS sraw,
-        |    sum(CAST(least(greatest(value, 0.0), 300.0)
-        |      AS DECIMAL(19,6))) AS sclip
-        |  FROM events GROUP BY 1
-        |), calc AS (
-        |  SELECT event_type, n, sraw, sclip,
-        |    (CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |      (strpos('0123456789abcdef',
-        |        substr(md5('dp|' || event_type), i + 1, 1)) - 1)
-        |      for i in range(0, 8)]) AS DOUBLE) + 0.5) / 4294967296.0
-        |      AS u,
-        |    300.0 / (CAST(n AS DOUBLE) * 1.0) AS b
-        |  FROM agg
-        |)
-        |SELECT event_type, n,
-        |  round(CAST(sraw AS DOUBLE) / CAST(n AS DOUBLE), 6)
-        |    AS raw_mean,
-        |  round(CAST(sclip AS DOUBLE) / CAST(n AS DOUBLE), 6)
-        |    AS clipped_mean,
-        |  round(CAST(sclip AS DOUBLE) / CAST(n AS DOUBLE)
-        |    + -b * sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5)), 6)
-        |    AS released_mean,
-        |  round(b, 9) AS noise_scale,
-        |  CAST(1.0 AS DOUBLE) AS epsilon
-        |FROM calc ORDER BY event_type""".stripMargin,
-
-    "q258_hill_tail" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS vc,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |), nt AS (
-        |  SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n,
-        |    (99 * sum(cnt) + 99) // 100 AS k
-        |  FROM h GROUP BY 1
-        |), u AS (
-        |  SELECT c.event_type, n, min(vc) AS uc
-        |  FROM (SELECT event_type, vc, sum(cnt)
-        |      OVER (PARTITION BY event_type ORDER BY vc) AS cum
-        |    FROM h) c
-        |  JOIN nt USING (event_type)
-        |  WHERE cum >= k GROUP BY 1, 2
-        |), tail AS (
-        |  SELECT h.event_type, n, uc,
-        |    CAST(sum(cnt) AS BIGINT) AS n_tail,
-        |    sum(CAST(CAST(cnt AS DOUBLE) * ln(CAST(vc AS DOUBLE)
-        |      / CAST(uc AS DOUBLE)) AS DECIMAL(38,9))) AS slog
-        |  FROM h JOIN u USING (event_type)
-        |  WHERE vc > uc GROUP BY 1, 2, 3
-        |)
-        |SELECT event_type, n, CAST(uc AS DOUBLE) / 100.0 AS u, n_tail,
-        |  round(CAST(n_tail AS DOUBLE) / CAST(slog AS DOUBLE), 6)
-        |    AS alpha
-        |FROM tail ORDER BY event_type""".stripMargin,
-
-    "q259_power_mde" ->
-      """WITH agg AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(value AS DECIMAL(19,6))) AS sv,
-        |    sum(CAST(value AS DECIMAL(19,6))
-        |      * CAST(value AS DECIMAL(19,6))) AS svv
-        |  FROM events GROUP BY 1
-        |), calc AS (
-        |  SELECT event_type, n,
-        |    CAST(sv AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-        |    (CAST(n AS DOUBLE) * CAST(svv AS DOUBLE)
-        |      - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE))
-        |     / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS vars
-        |  FROM agg
-        |), m AS (
-        |  SELECT event_type, n, mean, vars,
-        |    (1.959963984540054 + 0.8416212335729143)
-        |      * sqrt(vars * (2.0 / (CAST(n AS DOUBLE) / 2.0))) AS mde
-        |  FROM calc
-        |)
-        |SELECT event_type, n, round(mean, 6) AS mean,
-        |  round(vars, 6) AS variance, round(mde, 6) AS mde_abs,
-        |  round(mde / mean, 6) AS mde_rel
-        |FROM m ORDER BY event_type""".stripMargin,
-
-    "q260_seq_patterns" ->
-      """WITH st AS (
-        |  SELECT user_id, event_type AS e1,
-        |    lead(event_type, 1) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS e2,
-        |    lead(event_type, 2) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS e3
-        |  FROM events
-        |)
-        |SELECT e1 || '>' || e2 || '>' || e3 AS pattern,
-        |  CAST(count(*) AS BIGINT) AS n_occurrences,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM st WHERE e3 IS NOT NULL
-        |GROUP BY 1 ORDER BY n_users DESC, pattern""".stripMargin,
-
-    "q261_mann_kendall" ->
-      """WITH daily AS (
-        |  SELECT epoch_us(ts) // 86400000000 AS dy,
-        |    sum(CAST(value AS DECIMAL(19,6))) AS y
-        |  FROM events GROUP BY 1
-        |), pr AS (
-        |  SELECT CAST(sum(CASE WHEN b.y > a.y THEN 1
-        |    WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT) AS s
-        |  FROM daily a JOIN daily b ON a.dy < b.dy
-        |), ties AS (
-        |  SELECT CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tc,
-        |    CAST(sum(t * (t - 1)) AS BIGINT) AS t2,
-        |    CAST(sum(t) AS BIGINT) AS n
-        |  FROM (SELECT y, CAST(count(*) AS BIGINT) AS t FROM daily
-        |        GROUP BY 1)
-        |)
-        |SELECT n, s,
-        |  round((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)
-        |    * (2.0 * CAST(n AS DOUBLE) + 5.0) - CAST(tc AS DOUBLE))
-        |    / 18.0, 6) AS var_s,
-        |  round(CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0)
-        |      / sqrt((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)
-        |        * (2.0 * CAST(n AS DOUBLE) + 5.0) - CAST(tc AS DOUBLE))
-        |        / 18.0)
-        |    WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0)
-        |      / sqrt((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)
-        |        * (2.0 * CAST(n AS DOUBLE) + 5.0) - CAST(tc AS DOUBLE))
-        |        / 18.0)
-        |    ELSE 0.0 END, 6) AS z,
-        |  round(CAST(s AS DOUBLE)
-        |    / sqrt((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) / 2.0)
-        |      * (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) / 2.0
-        |        - CAST(t2 AS DOUBLE) / 2.0)), 6) AS tau_b
-        |FROM pr, ties""".stripMargin,
-
-    "q262_mcnemar" ->
-      s"""WITH base AS (
-         |  SELECT (lang = 'en') AS truth,
-         |    n_chars >= 200 AS pa,
-         |    n_chars <= CAST(len($toksSql) AS BIGINT) * 6 AS pb
-         |  FROM documents
-         |), agg AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN pa = truth THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS acc_a_n,
-         |    CAST(sum(CASE WHEN pb = truth THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS acc_b_n,
-         |    CAST(sum(CASE WHEN pa = truth AND pb <> truth
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS b01,
-         |    CAST(sum(CASE WHEN pb = truth AND pa <> truth
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS b10
-         |  FROM base
-         |)
-         |SELECT n, b01, b10,
-         |  round(CAST(acc_a_n AS DOUBLE) / CAST(n AS DOUBLE), 6)
-         |    AS acc_a,
-         |  round(CAST(acc_b_n AS DOUBLE) / CAST(n AS DOUBLE), 6)
-         |    AS acc_b,
-         |  CASE WHEN b01 + b10 > 0 THEN
-         |    round((CAST(abs(b01 - b10) AS DOUBLE) - 1.0)
-         |      * (CAST(abs(b01 - b10) AS DOUBLE) - 1.0)
-         |      / CAST(b01 + b10 AS DOUBLE), 6) END AS chi2,
-         |  (CASE WHEN b01 + b10 > 0 THEN
-         |    (CAST(abs(b01 - b10) AS DOUBLE) - 1.0)
-         |      * (CAST(abs(b01 - b10) AS DOUBLE) - 1.0)
-         |      / CAST(b01 + b10 AS DOUBLE) ELSE 0.0 END)
-         |    > 3.841458820694124 AS significant
-         |FROM agg""".stripMargin,
-
-    "q263_lof" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qv
-         |  FROM embeddings
-         |), c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings
-         |), p AS (
-         |  SELECT qid, cid,
-         |    ${dotSql("qv", "cv")} AS dot,
-         |    ${normSql("qv")} AS nq,
-         |    ${normSql("cv")} AS nc
-         |  FROM q, c WHERE qid <> cid
-         |), scored AS (
-         |  SELECT qid AS query_id, cid AS neighbor_id,
-         |    round($cosSql, 6) AS sim
-         |  FROM p
-         |), knn AS (
-         |  SELECT query_id, neighbor_id, 1.0 - sim AS d, rk
-         |  FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS INT) AS rk
-         |    FROM scored)
-         |  WHERE rk <= 10
-         |), kd AS (
-         |  SELECT query_id AS neighbor_id, d AS kdist FROM knn
-         |  WHERE rk = 10
-         |), reach AS (
-         |  SELECT k.query_id,
-         |    CAST(greatest(k.d, kd.kdist) AS DECIMAL(9,6)) AS reach
-         |  FROM knn k JOIN kd USING (neighbor_id)
-         |), lrd AS (
-         |  SELECT query_id,
-         |    CASE WHEN CAST(sum(reach) AS DOUBLE) > 0.0
-         |      THEN round(10.0 / CAST(sum(reach) AS DOUBLE), 9) END
-         |      AS lrd
-         |  FROM reach GROUP BY 1
-         |), nb AS (
-         |  SELECT k.query_id, sum(CAST(l.lrd AS DECIMAL(19,9))) AS slrd,
-         |    CAST(count(l.lrd) AS BIGINT) AS nbc
-         |  FROM knn k JOIN lrd l ON l.query_id = k.neighbor_id
-         |  GROUP BY 1
-         |)
-         |SELECT l.query_id AS vec_id, round(kd2.kdist, 6) AS kdist,
-         |  l.lrd,
-         |  CASE WHEN l.lrd IS NOT NULL AND nbc = 10
-         |    THEN round(CAST(slrd AS DOUBLE) / (10.0 * l.lrd), 6) END
-         |    AS lof
-         |FROM lrd l JOIN nb USING (query_id)
-         |JOIN kd kd2 ON kd2.neighbor_id = l.query_id
-         |ORDER BY vec_id""".stripMargin,
-
-    "q264_data_shapley" -> {
-      val values = shapleyCoalitions.map { case (g, s0, s1, w) =>
-        s"($g, $s0, $s1, $w)" }.mkString(", ")
-      s"""WITH tk AS (
-         |  SELECT doc_id, source,
-         |    $toksSql AS raw
-         |  FROM documents
-         |), base AS (
-         |  SELECT CAST(substr(source, 4) AS INTEGER) % 4 AS g,
-         |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) >= 'c' AS ev,
-         |    unnest(CASE WHEN len(raw) < 3
-         |      THEN [array_to_string(raw, ' ')]
-         |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-         |            for i in range(0, len(raw) - 2)] END) AS sh
-         |  FROM tk
-         |), evsh AS (SELECT DISTINCT sh FROM base WHERE ev
-         |), masks AS (
-         |  SELECT sh, bit_or(CAST(pow(2, g) AS INTEGER)) AS mask
-         |  FROM base WHERE NOT ev AND sh IN (SELECT sh FROM evsh)
-         |  GROUP BY 1
-         |), hist AS (
-         |  SELECT mask, CAST(count(*) AS BIGINT) AS cnt
-         |  FROM masks GROUP BY 1
-         |), subsets AS (SELECT unnest(range(0, 16)) AS smask
-         |), vtab AS (
-         |  SELECT smask, coalesce(CAST(sum(cnt) AS BIGINT), 0) AS v
-         |  FROM subsets LEFT JOIN hist ON (smask & mask) <> 0
-         |  GROUP BY 1
-         |), terms(g, s_without, s_with, w) AS (VALUES $values
-         |), phi AS (
-         |  SELECT g, round(CAST(sum(CAST(round(
-         |      w * CAST(v1.v - v0.v AS DOUBLE), 9) AS DECIMAL(19,9)))
-         |      AS DOUBLE), 6) AS shapley
-         |  FROM terms JOIN vtab v0 ON v0.smask = s_without
-         |  JOIN vtab v1 ON v1.smask = s_with
-         |  GROUP BY 1
-         |), ntr AS (
-         |  SELECT CAST(substr(source, 4) AS INTEGER) % 4 AS g,
-         |    CAST(count(*) AS BIGINT) AS n_train_docs
-         |  FROM documents
-         |  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'
-         |  GROUP BY 1
-         |), vf AS (SELECT v AS v_full FROM vtab WHERE smask = 15)
-         |SELECT phi.g, n_train_docs, shapley,
-         |  round(shapley / CAST(v_full AS DOUBLE), 6) AS share
-         |FROM phi JOIN ntr USING (g), vf ORDER BY g""".stripMargin
-    },
-
-    "q265_ks_pvalue" ->
-      """WITH e AS (
-        |  SELECT event_type AS g,
-        |    CAST(floor(value * 100) AS BIGINT) AS v,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN 1 ELSE 0 END AS is_ref
-        |  FROM events
-        |), h AS (
-        |  SELECT g, v, CAST(sum(is_ref) AS BIGINT) AS ca,
-        |    CAST(sum(1 - is_ref) AS BIGINT) AS cb
-        |  FROM e GROUP BY 1, 2
-        |), cw AS (
-        |  SELECT g, v, ca, cb,
-        |    sum(ca) OVER (PARTITION BY g ORDER BY v) AS cuma,
-        |    sum(cb) OVER (PARTITION BY g ORDER BY v) AS cumb,
-        |    sum(ca) OVER (PARTITION BY g) AS na,
-        |    sum(cb) OVER (PARTITION BY g) AS nb
-        |  FROM h
-        |), st AS (
-        |  SELECT g, CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
-        |    CAST(max(abs(cuma * nb - cumb * na)) AS BIGINT) AS mx
-        |  FROM cw WHERE na > 0 AND nb > 0
-        |  GROUP BY 1, 2, 3
-        |), calc AS (
-        |  SELECT g, na, nb,
-        |    CAST(mx AS DOUBLE)
-        |      / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) AS d,
-        |    (sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)
-        |        / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE))) + 0.12
-        |      + 0.11 / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)
-        |        / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE))))
-        |      * (CAST(mx AS DOUBLE)
-        |        / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))) AS lam
-        |  FROM st
-        |), pv AS (
-        |  SELECT g, na, nb, d, lam,
-        |    least(1.0, greatest(0.0, 2.0 * (exp(-2.0 * (lam * lam))
-        |      - exp(-8.0 * (lam * lam)) + exp(-18.0 * (lam * lam))
-        |      - exp(-32.0 * (lam * lam))
-        |      + exp(-50.0 * (lam * lam))))) AS pc
-        |  FROM calc
-        |)
-        |SELECT g AS event_type, na AS n_ref, nb AS n_cur,
-        |  round(d, 6) AS d, round(lam, 6) AS lambda,
-        |  round(pc, 9) AS p_value, round(pc, 9) < 0.05 AS reject
-        |FROM pv ORDER BY event_type""".stripMargin,
-
-    "q266_mann_whitney" ->
-      """WITH h AS (
-        |  SELECT event_type AS g,
-        |    CAST(floor(value * 100) AS BIGINT) AS v,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN 1 ELSE 0 END AS is_ref
-        |  FROM events
-        |), hh AS (
-        |  SELECT g, v, CAST(sum(is_ref) AS BIGINT) AS ca,
-        |    CAST(sum(1 - is_ref) AS BIGINT) AS cb
-        |  FROM h GROUP BY 1, 2
-        |), r AS (
-        |  SELECT g, ca, cb, ca + cb AS tt,
-        |    sum(ca + cb) OVER (PARTITION BY g ORDER BY v) AS cum
-        |  FROM hh
-        |), st AS (
-        |  SELECT g, CAST(sum(ca) AS BIGINT) AS na,
-        |    CAST(sum(cb) AS BIGINT) AS nb,
-        |    CAST(sum(ca * ((cum - tt) * 2 + tt + 1)) AS BIGINT) AS r2a,
-        |    CAST(sum(CAST(tt AS HUGEINT) * tt * tt - tt) AS DOUBLE)
-        |      AS ties
-        |  FROM r GROUP BY 1
-        |  HAVING sum(ca) > 0 AND sum(cb) > 0
-        |), calc AS (
-        |  SELECT g, na, nb, r2a,
-        |    CAST(r2a - na * (na + 1) - na * nb AS DOUBLE) / 2.0
-        |      / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / 12.0
-        |        * ((CAST(na + nb AS DOUBLE) + 1.0)
-        |          - ties / (CAST(na + nb AS DOUBLE)
-        |            * (CAST(na + nb AS DOUBLE) - 1.0)))) AS zr
-        |  FROM st
-        |), pv0 AS (
-        |  SELECT *, abs(zr) AS az,
-        |    1.0 / (1.0 + 0.2316419 * abs(zr)) AS tt
-        |  FROM calc
-        |)
-        |SELECT g AS event_type, na AS n_ref, nb AS n_cur,
-        |  round(CAST(r2a - na * (na + 1) AS DOUBLE) / 2.0, 1) AS u_a,
-        |  round(zr, 6) AS z,
-        |  round(2.0 * (0.3989422804014327 * exp(-0.5 * az * az))
-        |    * (tt * (0.319381530 + tt * (-0.356563782
-        |      + tt * (1.781477937 + tt * (-1.821255978
-        |        + tt * 1.330274429))))), 9) AS p_value,
-        |  round(2.0 * (0.3989422804014327 * exp(-0.5 * az * az))
-        |    * (tt * (0.319381530 + tt * (-0.356563782
-        |      + tt * (1.781477937 + tt * (-1.821255978
-        |        + tt * 1.330274429))))), 9) < 0.05 AS reject
-        |FROM pv0 ORDER BY event_type""".stripMargin,
-
-    "q267_kruskal_wallis" ->
-      """WITH hg AS MATERIALIZED (
-        |  SELECT event_type AS g,
-        |    CAST(floor(value * 100) AS BIGINT) AS v,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |), pooled AS MATERIALIZED (
-        |  SELECT v, CAST(sum(cnt) AS BIGINT) AS tt FROM hg GROUP BY 1
-        |), pr AS (
-        |  SELECT v, (cum - tt) * 2 + tt + 1 AS ar2
-        |  FROM (SELECT v, tt, sum(tt) OVER (ORDER BY v) AS cum
-        |        FROM pooled)
-        |), perg AS (
-        |  SELECT g, CAST(sum(cnt) AS BIGINT) AS ng,
-        |    CAST(sum(cnt * ar2) AS BIGINT) AS r2g
-        |  FROM hg JOIN pr USING (v) GROUP BY 1
-        |), gs AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(ng) AS BIGINT) AS n,
-        |    CAST(sum(CAST(round((CAST(r2g AS DOUBLE) / 2.0)
-        |      * (CAST(r2g AS DOUBLE) / 2.0) / CAST(ng AS DOUBLE), 6)
-        |      AS DECIMAL(38,6))) AS DOUBLE) AS sr
-        |  FROM perg
-        |), tsum AS (
-        |  SELECT CAST(sum(CAST(tt AS HUGEINT) * tt * tt - tt)
-        |    AS DOUBLE) AS ties
-        |  FROM pooled
-        |), calc AS (
-        |  SELECT k, n,
-        |    (12.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))
-        |        * sr - 3.0 * (CAST(n AS DOUBLE) + 1.0))
-        |      / (1.0 - ties / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-        |        * CAST(n AS DOUBLE) - CAST(n AS DOUBLE))) AS h,
-        |    CAST(k AS DOUBLE) - 1.0 AS df
-        |  FROM gs, tsum
-        |), zc AS (
-        |  SELECT k, n, h,
-        |    (cbrt(h / df) - (1.0 - 2.0 / (9.0 * df)))
-        |      / sqrt(2.0 / (9.0 * df)) AS zwh
-        |  FROM calc
-        |), pv0 AS (
-        |  SELECT k, n, h, zwh, abs(zwh) AS az,
-        |    1.0 / (1.0 + 0.2316419 * abs(zwh)) AS tt
-        |  FROM zc
-        |), pv AS (
-        |  SELECT k, n, h, zwh,
-        |    CASE WHEN zwh >= 0
-        |      THEN 0.3989422804014327 * exp(-0.5 * az * az)
-        |        * (tt * (0.319381530 + tt * (-0.356563782
-        |          + tt * (1.781477937 + tt * (-1.821255978
-        |            + tt * 1.330274429)))))
-        |      ELSE 1.0 - 0.3989422804014327 * exp(-0.5 * az * az)
-        |        * (tt * (0.319381530 + tt * (-0.356563782
-        |          + tt * (1.781477937 + tt * (-1.821255978
-        |            + tt * 1.330274429))))) END AS p
-        |  FROM pv0
-        |)
-        |SELECT k, n, round(h, 6) AS h, round(zwh, 6) AS z_wh,
-        |  round(p, 9) AS p_value, round(p, 9) < 0.05 AS reject
-        |FROM pv""".stripMargin,
-
-    "q268_quality_logreg" -> {
-      val prob = "1.0 / (1.0 + exp(-(w0 + w1 * x1 + w2 * x2)))"
-      val yd = "(CASE WHEN y THEN 1.0 ELSE 0.0 END)"
-      val resid = s"CAST(n AS DOUBLE) * ($yd - $prob)"
-      def gsum(e: String) =
-        s"CAST(sum(CAST(round($e, 9) AS DECIMAL(29,9))) AS DOUBLE)"
-      val iter = (k: Int) =>
-        s"""g$k AS (
-           |  SELECT ${gsum(resid)} AS g0,
-           |    ${gsum(s"$resid * x1")} AS g1,
-           |    ${gsum(s"$resid * x2")} AS g2
-           |  FROM feats, s${k - 1}
-           |), s$k AS (
-           |  SELECT round(w0 + 2.0 * g0 / CAST(nt AS DOUBLE), 12) AS w0,
-           |    round(w1 + 2.0 * g1 / CAST(nt AS DOUBLE), 12) AS w1,
-           |    round(w2 + 2.0 * g2 / CAST(nt AS DOUBLE), 12) AS w2
-           |  FROM g$k, s${k - 1}, momc
-           |)""".stripMargin
-      s"""WITH tk AS (
-         |  SELECT n_chars, lang,
-         |    greatest(CAST(len($toksSql) AS BIGINT), 1) AS ntok
-         |  FROM documents
-         |), hist AS MATERIALIZED (
-         |  SELECT round(ln(CAST(n_chars AS DOUBLE) + 1.0), 2) AS u,
-         |    round(CAST(n_chars AS DOUBLE) / CAST(ntok AS DOUBLE), 1)
-         |      AS v,
-         |    lang = 'en' AS y, CAST(count(*) AS BIGINT) AS n
-         |  FROM tk GROUP BY 1, 2, 3
-         |), mom AS (
-         |  SELECT CAST(sum(n) AS BIGINT) AS nt,
-         |    sum(CAST(round(u * n, 6) AS DECIMAL(29,6))) AS su,
-         |    sum(CAST(round(u * u * n, 6) AS DECIMAL(29,6))) AS suu,
-         |    sum(CAST(round(v * n, 6) AS DECIMAL(29,6))) AS sv,
-         |    sum(CAST(round(v * v * n, 6) AS DECIMAL(29,6))) AS svv
-         |  FROM hist
-         |), momc AS (
-         |  SELECT nt,
-         |    CAST(su AS DOUBLE) / CAST(nt AS DOUBLE) AS mu,
-         |    CAST(sv AS DOUBLE) / CAST(nt AS DOUBLE) AS mv,
-         |    sqrt(CAST(suu AS DOUBLE) / CAST(nt AS DOUBLE)
-         |      - (CAST(su AS DOUBLE) / CAST(nt AS DOUBLE))
-         |        * (CAST(su AS DOUBLE) / CAST(nt AS DOUBLE))) AS sdu,
-         |    sqrt(CAST(svv AS DOUBLE) / CAST(nt AS DOUBLE)
-         |      - (CAST(sv AS DOUBLE) / CAST(nt AS DOUBLE))
-         |        * (CAST(sv AS DOUBLE) / CAST(nt AS DOUBLE))) AS sdv
-         |  FROM mom
-         |), feats AS MATERIALIZED (
-         |  SELECT round((u - mu) / sdu, 6) AS x1,
-         |    round((v - mv) / sdv, 6) AS x2, y, n
-         |  FROM hist, momc
-         |), s0 AS (SELECT CAST(0.0 AS DOUBLE) AS w0,
-         |  CAST(0.0 AS DOUBLE) AS w1, CAST(0.0 AS DOUBLE) AS w2),
-         |${(1 to 10).map(iter).mkString(",\n")},
-         |acc AS (
-         |  SELECT CAST(sum(n) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN ($prob >= 0.5) = y THEN n ELSE 0 END)
-         |      AS BIGINT) AS n_correct,
-         |    CAST(sum(CAST(round(CAST(n AS DOUBLE)
-         |      * (-($yd * ln($prob) + (1.0 - $yd)
-         |        * ln(1.0 - $prob))), 9) AS DECIMAL(29,9)))
-         |      AS DOUBLE) AS nll
-         |  FROM feats, s10
-         |)
-         |SELECT n, round(w0, 6) AS w0, round(w1, 6) AS w1,
-         |  round(w2, 6) AS w2,
-         |  round(CAST(n_correct AS DOUBLE) / CAST(n AS DOUBLE), 6)
-         |    AS accuracy,
-         |  round(nll / CAST(n AS DOUBLE), 6) AS log_loss
-         |FROM acc, s10""".stripMargin
-    },
-
-    "q269_cox_purchase" -> {
-      val mu = "CAST(n1r AS DOUBLE) * exp(beta) / (CAST(n0r AS DOUBLE)" +
-        " + CAST(n1r AS DOUBLE) * exp(beta))"
-      def pinSum(e: String) =
-        s"CAST(sum(CAST(round($e, 9) AS DECIMAL(29,9))) AS DOUBLE)"
-      val iter = (k: Int) =>
-        s"""i$k AS (
-           |  SELECT ${pinSum(s"CAST(d1 AS DOUBLE) - CAST(d AS DOUBLE) * $mu")} AS g,
-           |    ${pinSum(s"CAST(d AS DOUBLE) * $mu * (1.0 - $mu)")} AS info
-           |  FROM et, s${k - 1}
-           |), s$k AS (
-           |  SELECT round(beta + g / info, 12) AS beta
-           |  FROM i$k, s${k - 1}
-           |)""".stripMargin
-      s"""WITH byu AS (
-         |  SELECT user_id,
-         |    min(epoch_us(ts) // 86400000000) AS d0,
-         |    min(CASE WHEN event_type = 'purchase'
-         |      THEN epoch_us(ts) // 86400000000 END) AS dp,
-         |    min(CASE WHEN event_type = 'signup'
-         |      THEN epoch_us(ts) // 86400000000 END) AS ds
-         |  FROM events GROUP BY 1
-         |), subj AS (
-         |  SELECT CASE WHEN dp IS NOT NULL AND dp - d0 <= 5
-         |      THEN dp - d0 ELSE 5 END AS t,
-         |    coalesce(ds = d0, false) AS x,
-         |    dp IS NOT NULL AND dp - d0 <= 5 AS death
-         |  FROM byu
-         |), hist AS MATERIALIZED (
-         |  SELECT t, x,
-         |    CAST(sum(CASE WHEN death THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS d,
-         |    CAST(count(*) AS BIGINT) AS tot
-         |  FROM subj GROUP BY 1, 2
-         |), grid AS (
-         |  SELECT ts0.t, xs.x, coalesce(h.d, 0) AS d,
-         |    coalesce(h.tot, 0) AS tot
-         |  FROM (SELECT DISTINCT t FROM hist) ts0
-         |  CROSS JOIN (SELECT unnest([false, true]) AS x) xs
-         |  LEFT JOIN hist h ON h.t = ts0.t AND h.x = xs.x
-         |), risk AS (
-         |  SELECT t, x, d, tot,
-         |    sum(tot) OVER (PARTITION BY x ORDER BY t DESC) AS atrisk
-         |  FROM grid
-         |), et AS MATERIALIZED (
-         |  SELECT t, CAST(sum(d) AS BIGINT) AS d,
-         |    CAST(sum(CASE WHEN x THEN d ELSE 0 END) AS BIGINT) AS d1,
-         |    CAST(sum(CASE WHEN x THEN atrisk ELSE 0 END) AS BIGINT)
-         |      AS n1r,
-         |    CAST(sum(CASE WHEN NOT x THEN atrisk ELSE 0 END)
-         |      AS BIGINT) AS n0r
-         |  FROM risk GROUP BY 1 HAVING sum(d) > 0
-         |), tots AS (
-         |  SELECT CAST(sum(tot) AS BIGINT) AS n_subjects,
-         |    CAST(sum(d) AS BIGINT) AS n_events
-         |  FROM hist
-         |), s0 AS (SELECT CAST(0.0 AS DOUBLE) AS beta),
-         |${(1 to 4).map(iter).mkString(",\n")},
-         |fin AS (
-         |  SELECT ${pinSum(s"CAST(d AS DOUBLE) * $mu * (1.0 - $mu)")} AS info
-         |  FROM et, s4
-         |), pv0 AS (
-         |  SELECT n_subjects, n_events, beta, info,
-         |    abs(beta / (1.0 / sqrt(info))) AS az,
-         |    1.0 / (1.0 + 0.2316419
-         |      * abs(beta / (1.0 / sqrt(info)))) AS tt
-         |  FROM fin, s4, tots
-         |)
-         |SELECT n_subjects, n_events, round(beta, 6) AS beta,
-         |  round(exp(beta), 6) AS hazard_ratio,
-         |  round(1.0 / sqrt(info), 6) AS se,
-         |  round(beta / (1.0 / sqrt(info)), 6) AS z,
-         |  round(2.0 * (0.3989422804014327 * exp(-0.5 * az * az))
-         |    * (tt * (0.319381530 + tt * (-0.356563782
-         |      + tt * (1.781477937 + tt * (-1.821255978
-         |        + tt * 1.330274429))))), 9) AS p_value
-         |FROM pv0""".stripMargin
-    },
-
-    "q270_item_cf" ->
-      """WITH baskets AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem
-        |), nc AS (
-        |  SELECT pk, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM baskets GROUP BY 1
-        |), pairs AS (
-        |  SELECT a.pk, b.pk2, CAST(count(*) AS BIGINT) AS co
-        |  FROM baskets a
-        |  JOIN (SELECT ok, pk AS pk2 FROM baskets) b USING (ok)
-        |  WHERE a.pk < b.pk2
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), sym AS (
-        |  SELECT pk AS a, pk2 AS b, co FROM pairs
-        |  UNION ALL
-        |  SELECT pk2 AS a, pk AS b, co FROM pairs
-        |), scored AS (
-        |  SELECT a, b, co,
-        |    round(CAST(co AS DOUBLE) / sqrt(CAST(na.cnt AS DOUBLE)
-        |      * CAST(nb.cnt AS DOUBLE)), 9) AS cs
-        |  FROM sym JOIN nc na ON na.pk = a JOIN nc nb ON nb.pk = b
-        |)
-        |SELECT a AS item, b AS neighbor, co, round(cs, 6) AS cosine, rk
-        |FROM (SELECT *, CAST(row_number() OVER (PARTITION BY a
-        |    ORDER BY cs DESC, b) AS INTEGER) AS rk FROM scored)
-        |WHERE rk <= 5 ORDER BY item, rk""".stripMargin,
-
-    "q271_uplift_qini" ->
-      """WITH users AS (
-        |  SELECT user_id,
-        |    sum(CASE WHEN event_type = 'purchase'
-        |      THEN CAST(value AS DECIMAL(19,6))
-        |      ELSE CAST(0 AS DECIMAL(19,6)) END) AS rev
-        |  FROM events GROUP BY 1
-        |), unitt AS (
-        |  SELECT user_id % 8 AS segment,
-        |    substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-        |      AS treated,
-        |    rev >= 600 AS conv
-        |  FROM users
-        |), seg AS MATERIALIZED (
-        |  SELECT segment,
-        |    CAST(sum(CASE WHEN treated THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_t,
-        |    CAST(sum(CASE WHEN NOT treated THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_c,
-        |    CAST(sum(CASE WHEN treated AND conv THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS y_t,
-        |    CAST(sum(CASE WHEN NOT treated AND conv THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS y_c
-        |  FROM unitt GROUP BY 1
-        |  HAVING sum(CASE WHEN treated THEN 1 ELSE 0 END) > 0
-        |    AND sum(CASE WHEN NOT treated THEN 1 ELSE 0 END) > 0
-        |), up AS (
-        |  SELECT *, round(CAST(y_t AS DOUBLE) / CAST(n_t AS DOUBLE)
-        |    - CAST(y_c AS DOUBLE) / CAST(n_c AS DOUBLE), 6) AS uplift
-        |  FROM seg
-        |), ranked AS (
-        |  SELECT *,
-        |    CAST(row_number() OVER ord AS INTEGER) AS rank,
-        |    sum(n_t) OVER cum AS cn_t, sum(n_c) OVER cum AS cn_c,
-        |    sum(y_t) OVER cum AS cy_t, sum(y_c) OVER cum AS cy_c
-        |  FROM up
-        |  WINDOW ord AS (ORDER BY uplift DESC, segment),
-        |    cum AS (ORDER BY uplift DESC, segment
-        |      ROWS UNBOUNDED PRECEDING)
-        |), tot AS (
-        |  SELECT CAST(sum(n_t) AS BIGINT) AS tn_t,
-        |    CAST(sum(n_c) AS BIGINT) AS tn_c,
-        |    CAST(sum(y_t) AS BIGINT) AS ty_t,
-        |    CAST(sum(y_c) AS BIGINT) AS ty_c
-        |  FROM seg
-        |), curve AS (
-        |  SELECT r.*, tn_t, tn_c, ty_t, ty_c,
-        |    round(CAST(cn_t + cn_c AS DOUBLE)
-        |      / CAST(tn_t + tn_c AS DOUBLE), 6) AS frac_pop,
-        |    CASE WHEN cn_c > 0 THEN round(CAST(cy_t AS DOUBLE)
-        |      - CAST(cy_c AS DOUBLE) * (CAST(cn_t AS DOUBLE)
-        |        / CAST(cn_c AS DOUBLE)), 6) END AS cum_gain
-        |  FROM ranked r, tot
-        |), terms AS (
-        |  SELECT *,
-        |    CASE WHEN rank = 1 THEN 0.0
-        |      ELSE lag(frac_pop) OVER (ORDER BY rank) END AS pf,
-        |    CASE WHEN rank = 1 THEN 0.0
-        |      ELSE lag(cum_gain) OVER (ORDER BY rank) END AS pg
-        |  FROM curve
-        |), auc AS (
-        |  SELECT sum(CAST(round((frac_pop - pf) * (cum_gain + pg)
-        |    / 2.0, 9) AS DECIMAL(19,9))) AS auc
-        |  FROM terms
-        |)
-        |SELECT segment, n_t, n_c, y_t, y_c, uplift, rank, frac_pop,
-        |  cum_gain,
-        |  round(CAST(auc AS DOUBLE) - (CAST(ty_t AS DOUBLE)
-        |    - CAST(ty_c AS DOUBLE) * (CAST(tn_t AS DOUBLE)
-        |      / CAST(tn_c AS DOUBLE))) / 2.0, 6) AS qini
-        |FROM curve, auc ORDER BY rank""".stripMargin,
-
-    "q272_ipf_raking" -> {
-      val half = (k: Int, key: String, kdim: String) =>
-        s"""m$k AS (
-           |  SELECT $key AS mk,
-           |    sum(CAST(round(n * w, 6) AS DECIMAL(29,6))) AS msum
-           |  FROM c${k - 1} GROUP BY 1
-           |), c$k AS (
-           |  SELECT source, lang, n,
-           |    round(w * ((CAST(nt AS DOUBLE) / CAST($kdim AS DOUBLE))
-           |      / CAST(msum AS DOUBLE)), 12) AS w
-           |  FROM c${k - 1} JOIN m$k ON $key = mk, dims
-           |)""".stripMargin
-      val rounds = (1 to 12).map(k => if (k % 2 == 1)
-        half(k, "source", "ks") else half(k, "lang", "kl"))
-        .mkString(",\n")
-      s"""WITH cells0 AS MATERIALIZED (
-         |  SELECT source, lang, CAST(count(*) AS BIGINT) AS n
-         |  FROM documents GROUP BY 1, 2
-         |), dims AS (
-         |  SELECT CAST(sum(n) AS BIGINT) AS nt,
-         |    CAST(count(DISTINCT source) AS BIGINT) AS ks,
-         |    CAST(count(DISTINCT lang) AS BIGINT) AS kl
-         |  FROM cells0
-         |), c0 AS (
-         |  SELECT source, lang, n, CAST(1.0 AS DOUBLE) AS w
-         |  FROM cells0
-         |),
-         |$rounds
-         |SELECT source, lang, n, round(w, 6) AS weight,
-         |  round(CAST(n AS DOUBLE) * w, 6) AS fitted
-         |FROM c12 ORDER BY source, lang""".stripMargin
-    },
-
-    "q273_betweenness" -> betweennessSql(4, 16),
-
-    "q275_wilcoxon_signed" ->
-      """WITH pu AS (
-        |  SELECT user_id,
-        |    CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END)
-        |      AS BIGINT) AS bfr,
-        |    CAST(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END)
-        |      AS BIGINT) AS aft
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1
-        |), dd AS (SELECT aft - bfr AS d FROM pu
-        |), zs AS (
-        |  SELECT CAST(sum(CASE WHEN d = 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_zero
-        |  FROM dd
-        |), h AS (
-        |  SELECT abs(d) AS ad,
-        |    CAST(sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS pos,
-        |    CAST(count(*) AS BIGINT) AS tt
-        |  FROM dd WHERE d <> 0 GROUP BY 1
-        |), r AS (
-        |  SELECT pos, tt,
-        |    sum(tt) OVER (ORDER BY ad) AS cum
-        |  FROM h
-        |), st AS (
-        |  SELECT CAST(sum(tt) AS BIGINT) AS n,
-        |    CAST(sum(pos * ((cum - tt) * 2 + tt + 1)) AS BIGINT) AS w2,
-        |    sum(CAST(tt AS HUGEINT) * tt * tt - tt) AS ties
-        |  FROM r
-        |), calc AS (
-        |  SELECT n, w2,
-        |    CAST(w2 * 2 - n * (n + 1) AS DOUBLE) / 4.0
-        |      / sqrt(CAST(CAST(2 AS HUGEINT) * n * (n + 1)
-        |        * (n * 2 + 1) - ties AS DOUBLE) / 48.0) AS zr
-        |  FROM st
-        |), pv0 AS (
-        |  SELECT *, abs(zr) AS az,
-        |    1.0 / (1.0 + 0.2316419 * abs(zr)) AS tt
-        |  FROM calc
-        |)
-        |SELECT n AS n_pairs, n_zero,
-        |  round(CAST(w2 AS DOUBLE) / 2.0, 1) AS w_plus,
-        |  round(zr, 6) AS z,
-        |  round(2.0 * (0.3989422804014327 * exp(-0.5 * az * az))
-        |    * (tt * (0.319381530 + tt * (-0.356563782
-        |      + tt * (1.781477937 + tt * (-1.821255978
-        |        + tt * 1.330274429))))), 9) AS p_value,
-        |  round(2.0 * (0.3989422804014327 * exp(-0.5 * az * az))
-        |    * (tt * (0.319381530 + tt * (-0.356563782
-        |      + tt * (1.781477937 + tt * (-1.821255978
-        |        + tt * 1.330274429))))), 9) < 0.05 AS reject
-        |FROM pv0, zs""".stripMargin,
-
-    "q276_ipw_ate" -> {
-      val prob = "1.0 / (1.0 + exp(-(w0 + w1 * x1 + w2 * x2)))"
-      val yd = "(CASE WHEN tr THEN 1.0 ELSE 0.0 END)"
-      val resid = s"CAST(n AS DOUBLE) * ($yd - $prob)"
-      def gsum(e: String) =
-        s"CAST(sum(CAST(round($e, 9) AS DECIMAL(29,9))) AS DOUBLE)"
-      val iter = (k: Int) =>
-        s"""g$k AS (
-           |  SELECT ${gsum(resid)} AS g0,
-           |    ${gsum(s"$resid * x1")} AS g1,
-           |    ${gsum(s"$resid * x2")} AS g2
-           |  FROM feats, s${k - 1}
-           |), s$k AS (
-           |  SELECT round(w0 + 2.0 * g0 / CAST(nt AS DOUBLE), 12) AS w0,
-           |    round(w1 + 2.0 * g1 / CAST(nt AS DOUBLE), 12) AS w1,
-           |    round(w2 + 2.0 * g2 / CAST(nt AS DOUBLE), 12) AS w2
-           |  FROM g$k, s${k - 1}, momc
-           |)""".stripMargin
-      val phat = "least(0.99, greatest(0.01, 1.0 / (1.0 + " +
-        "exp(-(fw0 + fw1 * x1 + fw2 * x2)))))"
-      def pinW(e: String) = s"CAST(round($e, 6) AS DECIMAL(29,6))"
-      s"""WITH hist AS MATERIALIZED (
-         |  SELECT round(c_acctbal / 1000.0, 1) AS u,
-         |    CAST(month(o_orderdate) AS DOUBLE) AS v,
-         |    o_orderpriority IN ('1-URGENT', '2-HIGH') AS tr,
-         |    CAST(count(*) AS BIGINT) AS n,
-         |    sum(CAST(o_totalprice AS DECIMAL(19,6))) AS sumy
-         |  FROM orders JOIN customer ON o_custkey = c_custkey
-         |  GROUP BY 1, 2, 3
-         |), mom AS (
-         |  SELECT CAST(sum(n) AS BIGINT) AS nt,
-         |    sum(CAST(round(u * n, 6) AS DECIMAL(29,6))) AS su,
-         |    sum(CAST(round(u * u * n, 6) AS DECIMAL(29,6))) AS suu,
-         |    sum(CAST(round(v * n, 6) AS DECIMAL(29,6))) AS sv,
-         |    sum(CAST(round(v * v * n, 6) AS DECIMAL(29,6))) AS svv
-         |  FROM hist
-         |), momc AS (
-         |  SELECT nt,
-         |    CAST(su AS DOUBLE) / CAST(nt AS DOUBLE) AS mu,
-         |    CAST(sv AS DOUBLE) / CAST(nt AS DOUBLE) AS mv,
-         |    sqrt(CAST(suu AS DOUBLE) / CAST(nt AS DOUBLE)
-         |      - (CAST(su AS DOUBLE) / CAST(nt AS DOUBLE))
-         |        * (CAST(su AS DOUBLE) / CAST(nt AS DOUBLE))) AS sdu,
-         |    sqrt(CAST(svv AS DOUBLE) / CAST(nt AS DOUBLE)
-         |      - (CAST(sv AS DOUBLE) / CAST(nt AS DOUBLE))
-         |        * (CAST(sv AS DOUBLE) / CAST(nt AS DOUBLE))) AS sdv
-         |  FROM mom
-         |), feats AS MATERIALIZED (
-         |  SELECT round((u - mu) / sdu, 6) AS x1,
-         |    round((v - mv) / sdv, 6) AS x2, tr, n, sumy
-         |  FROM hist, momc
-         |), s0 AS (SELECT CAST(0.0 AS DOUBLE) AS w0,
-         |  CAST(0.0 AS DOUBLE) AS w1, CAST(0.0 AS DOUBLE) AS w2),
-         |${(1 to 8).map(iter).mkString(",\n")},
-         |fitw AS (SELECT round(w0, 6) AS fw0, round(w1, 6) AS fw1,
-         |  round(w2, 6) AS fw2 FROM s8),
-         |sums AS (
-         |  SELECT CAST(sum(n) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN tr THEN n ELSE 0 END) AS BIGINT)
-         |      AS n_t,
-         |    sum(CASE WHEN tr THEN sumy
-         |      ELSE CAST(0 AS DECIMAL(29,6)) END) AS y_t_raw,
-         |    sum(CASE WHEN NOT tr THEN sumy
-         |      ELSE CAST(0 AS DECIMAL(29,6)) END) AS y_c_raw,
-         |    sum(CASE WHEN tr
-         |      THEN ${pinW(s"CAST(sumy AS DOUBLE) / $phat")}
-         |      ELSE CAST(0 AS DECIMAL(29,6)) END) AS wy_t,
-         |    sum(CASE WHEN tr
-         |      THEN ${pinW(s"CAST(n AS DOUBLE) / $phat")}
-         |      ELSE CAST(0 AS DECIMAL(29,6)) END) AS wn_t,
-         |    sum(CASE WHEN NOT tr
-         |      THEN ${pinW(s"CAST(sumy AS DOUBLE) / (1.0 - $phat)")}
-         |      ELSE CAST(0 AS DECIMAL(29,6)) END) AS wy_c,
-         |    sum(CASE WHEN NOT tr
-         |      THEN ${pinW(s"CAST(n AS DOUBLE) / (1.0 - $phat)")}
-         |      ELSE CAST(0 AS DECIMAL(29,6)) END) AS wn_c,
-         |    max(fw0) AS w0, max(fw1) AS w1, max(fw2) AS w2
-         |  FROM feats, fitw
-         |)
-         |SELECT n, n_t, w0, w1, w2,
-         |  round(CAST(y_t_raw AS DOUBLE) / CAST(n_t AS DOUBLE)
-         |    - CAST(y_c_raw AS DOUBLE) / CAST(n - n_t AS DOUBLE), 6)
-         |    AS naive_diff,
-         |  round(CAST(wy_t AS DOUBLE) / CAST(wn_t AS DOUBLE)
-         |    - CAST(wy_c AS DOUBLE) / CAST(wn_c AS DOUBLE), 6)
-         |    AS ate_ipw
-         |FROM sums""".stripMargin
-    },
-
-    "q274_forecast_backtest" ->
-      """WITH daily AS MATERIALIZED (
-        |  SELECT epoch_us(ts) // 86400000000 AS dy,
-        |    sum(CAST(value AS DECIMAL(19,6))) AS y
-        |  FROM events GROUP BY 1
-        |), lagged AS (
-        |  SELECT dy, y, lag(y, 7) OVER (ORDER BY dy) AS f7,
-        |    lag(y, 1) OVER (ORDER BY dy) AS p1
-        |  FROM daily
-        |), ev AS (
-        |  SELECT * FROM lagged WHERE f7 IS NOT NULL AND p1 IS NOT NULL
-        |), agg AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_eval,
-        |    sum(abs(y - f7)) AS sae,
-        |    sum(CAST(round(CAST(abs(y - f7) AS DOUBLE)
-        |      * CAST(abs(y - f7) AS DOUBLE), 6) AS DECIMAL(29,6)))
-        |      AS sse,
-        |    sum(abs(y - p1)) AS sae1,
-        |    sum(CAST(round(CASE WHEN abs(y) + abs(f7) > 0
-        |      THEN CAST(abs(y - f7) AS DOUBLE) * 2.0
-        |        / (CAST(abs(y) AS DOUBLE) + CAST(abs(f7) AS DOUBLE))
-        |      ELSE 0.0 END, 9) AS DECIMAL(19,9))) AS ssm
-        |  FROM ev
-        |), nd AS (SELECT CAST(count(*) AS BIGINT) AS n_days FROM daily)
-        |SELECT n_days, n_eval,
-        |  round(CAST(sae AS DOUBLE) / CAST(n_eval AS DOUBLE), 6)
-        |    AS mae,
-        |  round(sqrt(CAST(sse AS DOUBLE) / CAST(n_eval AS DOUBLE)), 6)
-        |    AS rmse,
-        |  round(CAST(ssm AS DOUBLE) / CAST(n_eval AS DOUBLE), 6)
-        |    AS smape,
-        |  round(CAST(sae AS DOUBLE) / CAST(sae1 AS DOUBLE), 6) AS mase
-        |FROM agg, nd""".stripMargin,
-
-    "q277_poisson_bootstrap" -> {
-      // the Poisson(1) inverse-CDF CASE chain is generated from the
-      // SAME threshold list the Spark side folds over
-      val wCase = "CASE " + operators.Stats.poissonCdf1.zipWithIndex
-        .map { case (t, k) => s"WHEN u < $t THEN $k" }
-        .mkString(" ") + " ELSE 8 END"
-      s"""WITH units AS MATERIALIZED (
-         |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_ord,
-         |    sum(CAST(o_totalprice AS DECIMAL(19,6))) AS sumy
-         |  FROM orders GROUP BY 1
-         |), full_t AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_units,
-         |    round(CAST(sum(sumy) AS DOUBLE)
-         |      / CAST(sum(n_ord) AS DOUBLE), 9) AS theta_hat
-         |  FROM units
-         |), drawn AS (
-         |  SELECT b, n_ord, sumy,
-         |    (CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-         |      (strpos('0123456789abcdef',
-         |        substr(md5('pb|' || CAST(o_custkey AS VARCHAR) || '|'
-         |          || CAST(b AS VARCHAR)), i + 1, 1)) - 1)
-         |      for i in range(0, 8)]) AS DOUBLE) + 0.5) / 4294967296.0
-         |      AS u
-         |  FROM units, range(64) t(b)
-         |), weighted AS (
-         |  SELECT b, $wCase AS w, n_ord, sumy FROM drawn
-         |), boot AS MATERIALIZED (
-         |  SELECT b,
-         |    round(CAST(sum(CAST(w AS DECIMAL(2,0)) * sumy) AS DOUBLE)
-         |      / CAST(sum(w * n_ord) AS DOUBLE), 9) AS theta_b
-         |  FROM weighted GROUP BY 1
-         |), ss AS (
-         |  SELECT sum(CAST(round(theta_b, 9) AS DECIMAL(29,9))) AS st,
-         |    sum(CAST(round(theta_b * theta_b, 6) AS DECIMAL(29,6)))
-         |      AS stt
-         |  FROM boot
-         |), ranked AS (
-         |  SELECT theta_b, row_number() OVER (ORDER BY theta_b, b)
-         |    AS rn
-         |  FROM boot
-         |)
-         |SELECT n_units, 64 AS b_count, theta_hat,
-         |  round(CAST(st AS DOUBLE) / 64.0, 6) AS boot_mean,
-         |  round(sqrt((CAST(stt AS DOUBLE)
-         |    - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) / 64.0)
-         |    / 63.0), 6) AS boot_se,
-         |  (SELECT round(theta_b, 6) FROM ranked WHERE rn = 2)
-         |    AS ci_lo,
-         |  (SELECT round(theta_b, 6) FROM ranked WHERE rn = 63)
-         |    AS ci_hi
-         |FROM full_t, ss""".stripMargin
-    },
-
-    "q278_signflip_test" ->
-      """WITH bounds AS (
-        |  SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS mid
-        |  FROM events
-        |), halves AS MATERIALIZED (
-        |  SELECT user_id, epoch_us(ts) >= mid AS h2,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(value AS DECIMAL(19,6))) AS sv
-        |  FROM events, bounds GROUP BY 1, 2
-        |), pairs AS MATERIALIZED (
-        |  SELECT a.user_id,
-        |    round(CAST(a.sv AS DOUBLE) / CAST(a.n AS DOUBLE)
-        |      - CAST(b.sv AS DOUBLE) / CAST(b.n AS DOUBLE), 9) AS d
-        |  FROM halves a JOIN halves b USING (user_id)
-        |  WHERE NOT a.h2 AND b.h2
-        |), obs AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-        |    round(CAST(sum(CAST(d AS DECIMAL(29,9))) AS DOUBLE)
-        |      / CAST(count(*) AS DOUBLE), 9) AS t_obs
-        |  FROM pairs
-        |), flips AS (
-        |  SELECT p,
-        |    round(CAST(sum(CAST(round(CASE WHEN
-        |        strpos('0123456789abcdef',
-        |          substr(md5('sf|' || CAST(user_id AS VARCHAR) || '|'
-        |            || CAST(p AS VARCHAR)), 1, 1)) - 1 < 8
-        |      THEN d ELSE -d END, 9) AS DECIMAL(29,9))) AS DOUBLE)
-        |      / CAST(count(*) AS DOUBLE), 9) AS t_p
-        |  FROM pairs, range(128) t(p) GROUP BY 1
-        |), cnt AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_ge
-        |  FROM flips, obs WHERE abs(t_p) >= abs(t_obs)
-        |)
-        |SELECT n_pairs, t_obs, n_ge,
-        |  round((1.0 + CAST(n_ge AS DOUBLE)) / 129.0, 6) AS p_value
-        |FROM obs, cnt""".stripMargin,
-
-    "q279_aipw_ate" -> {
-      // shares q276's hist/mom/feats/GD-iteration prefix verbatim,
-      // then adds the per-arm OLS outcome models (Cramer's rule — the
-      // same term order as Stats.ols2Beta) and the AIPW combine
-      val prob = "1.0 / (1.0 + exp(-(w0 + w1 * x1 + w2 * x2)))"
-      val yd = "(CASE WHEN tr THEN 1.0 ELSE 0.0 END)"
-      val resid = s"CAST(n AS DOUBLE) * ($yd - $prob)"
-      def gsum(e: String) =
-        s"CAST(sum(CAST(round($e, 9) AS DECIMAL(29,9))) AS DOUBLE)"
-      val iter = (k: Int) =>
-        s"""g$k AS (
-           |  SELECT ${gsum(resid)} AS g0,
-           |    ${gsum(s"$resid * x1")} AS g1,
-           |    ${gsum(s"$resid * x2")} AS g2
-           |  FROM feats, s${k - 1}
-           |), s$k AS (
-           |  SELECT round(w0 + 2.0 * g0 / CAST(nt AS DOUBLE), 12) AS w0,
-           |    round(w1 + 2.0 * g1 / CAST(nt AS DOUBLE), 12) AS w1,
-           |    round(w2 + 2.0 * g2 / CAST(nt AS DOUBLE), 12) AS w2
-           |  FROM g$k, s${k - 1}, momc
-           |)""".stripMargin
-      val phat = "least(0.99, greatest(0.01, 1.0 / (1.0 + " +
-        "exp(-(fw0 + fw1 * x1 + fw2 * x2)))))"
-      def dd(c: String) = s"CAST($c AS DOUBLE)"
-      def det3(a: Seq[String]): String = {
-        val Seq(a11, a12, a13, a21, a22, a23, a31, a32, a33) =
-          a.map(dd)
-        s"($a11 * ($a22 * $a33 - $a23 * $a32) " +
-          s"- $a12 * ($a21 * $a33 - $a23 * $a31) " +
-          s"+ $a13 * ($a21 * $a32 - $a22 * $a31))"
-      }
-      val det = det3(Seq("n", "sx1", "sx2", "sx1", "sx11", "sx12",
-        "sx2", "sx12", "sx22"))
-      val b0 = det3(Seq("sy", "sx1", "sx2", "sx1y", "sx11", "sx12",
-        "sx2y", "sx12", "sx22"))
-      val b1 = det3(Seq("n", "sy", "sx2", "sx1", "sx1y", "sx12",
-        "sx2", "sx2y", "sx22"))
-      val b2 = det3(Seq("n", "sx1", "sy", "sx1", "sx11", "sx1y",
-        "sx2", "sx12", "sx2y"))
-      s"""WITH hist AS MATERIALIZED (
-         |  SELECT round(c_acctbal / 1000.0, 1) AS u,
-         |    CAST(month(o_orderdate) AS DOUBLE) AS v,
-         |    o_orderpriority IN ('1-URGENT', '2-HIGH') AS tr,
-         |    CAST(count(*) AS BIGINT) AS n,
-         |    sum(CAST(o_totalprice AS DECIMAL(19,6))) AS sumy
-         |  FROM orders JOIN customer ON o_custkey = c_custkey
-         |  GROUP BY 1, 2, 3
-         |), mom AS (
-         |  SELECT CAST(sum(n) AS BIGINT) AS nt,
-         |    sum(CAST(round(u * n, 6) AS DECIMAL(29,6))) AS su,
-         |    sum(CAST(round(u * u * n, 6) AS DECIMAL(29,6))) AS suu,
-         |    sum(CAST(round(v * n, 6) AS DECIMAL(29,6))) AS sv,
-         |    sum(CAST(round(v * v * n, 6) AS DECIMAL(29,6))) AS svv
-         |  FROM hist
-         |), momc AS (
-         |  SELECT nt,
-         |    CAST(su AS DOUBLE) / CAST(nt AS DOUBLE) AS mu,
-         |    CAST(sv AS DOUBLE) / CAST(nt AS DOUBLE) AS mv,
-         |    sqrt(CAST(suu AS DOUBLE) / CAST(nt AS DOUBLE)
-         |      - (CAST(su AS DOUBLE) / CAST(nt AS DOUBLE))
-         |        * (CAST(su AS DOUBLE) / CAST(nt AS DOUBLE))) AS sdu,
-         |    sqrt(CAST(svv AS DOUBLE) / CAST(nt AS DOUBLE)
-         |      - (CAST(sv AS DOUBLE) / CAST(nt AS DOUBLE))
-         |        * (CAST(sv AS DOUBLE) / CAST(nt AS DOUBLE))) AS sdv
-         |  FROM mom
-         |), feats AS MATERIALIZED (
-         |  SELECT round((u - mu) / sdu, 6) AS x1,
-         |    round((v - mv) / sdv, 6) AS x2, tr, n, sumy
-         |  FROM hist, momc
-         |), s0 AS (SELECT CAST(0.0 AS DOUBLE) AS w0,
-         |  CAST(0.0 AS DOUBLE) AS w1, CAST(0.0 AS DOUBLE) AS w2),
-         |${(1 to 8).map(iter).mkString(",\n")},
-         |fitw AS (SELECT round(w0, 6) AS fw0, round(w1, 6) AS fw1,
-         |  round(w2, 6) AS fw2 FROM s8),
-         |osums AS (
-         |  SELECT tr, CAST(sum(n) AS BIGINT) AS n,
-         |    sum(CAST(round(x1 * n, 6) AS DECIMAL(29,6))) AS sx1,
-         |    sum(CAST(round(x2 * n, 6) AS DECIMAL(29,6))) AS sx2,
-         |    sum(CAST(round(x1 * x1 * n, 6) AS DECIMAL(29,6)))
-         |      AS sx11,
-         |    sum(CAST(round(x1 * x2 * n, 6) AS DECIMAL(29,6)))
-         |      AS sx12,
-         |    sum(CAST(round(x2 * x2 * n, 6) AS DECIMAL(29,6)))
-         |      AS sx22,
-         |    sum(sumy) AS sy,
-         |    sum(CAST(round(x1 * CAST(sumy AS DOUBLE), 6)
-         |      AS DECIMAL(29,6))) AS sx1y,
-         |    sum(CAST(round(x2 * CAST(sumy AS DOUBLE), 6)
-         |      AS DECIMAL(29,6))) AS sx2y
-         |  FROM feats GROUP BY 1
-         |), beta AS (
-         |  SELECT tr, round($b0 / $det, 9) AS b0,
-         |    round($b1 / $det, 9) AS b1,
-         |    round($b2 / $det, 9) AS b2
-         |  FROM osums
-         |), bt AS (SELECT b0 AS b0_t, b1 AS b1_t, b2 AS b2_t
-         |  FROM beta WHERE tr),
-         |bc AS (SELECT b0 AS b0_c, b1 AS b1_c, b2 AS b2_c
-         |  FROM beta WHERE NOT tr),
-         |cells AS (
-         |  SELECT n, sumy, tr,
-         |    round(b0_t + b1_t * x1 + b2_t * x2, 6) AS m1,
-         |    round(b0_c + b1_c * x1 + b2_c * x2, 6) AS m0,
-         |    $phat AS e, b0_t, b0_c
-         |  FROM feats, fitw, bt, bc
-         |), comb AS (
-         |  SELECT CAST(sum(n) AS BIGINT) AS nn,
-         |    CAST(sum(CASE WHEN tr THEN n ELSE 0 END) AS BIGINT)
-         |      AS n_t,
-         |    sum(CAST(round(CAST(n AS DOUBLE) * (m1 - m0)
-         |      + CASE WHEN tr
-         |        THEN (CAST(sumy AS DOUBLE)
-         |          - CAST(n AS DOUBLE) * m1) / e
-         |        ELSE -(CAST(sumy AS DOUBLE)
-         |          - CAST(n AS DOUBLE) * m0) / (1.0 - e) END, 6)
-         |      AS DECIMAL(29,6))) AS psi,
-         |    max(b0_t) AS b0_t, max(b0_c) AS b0_c
-         |  FROM cells
-         |)
-         |SELECT nn AS n, n_t, b0_t, b0_c,
-         |  round(CAST(psi AS DOUBLE) / CAST(nn AS DOUBLE), 6)
-         |    AS ate_aipw
-         |FROM comb""".stripMargin
-    },
-
-    "q280_rdd" ->
-      """WITH j AS MATERIALIZED (
-        |  SELECT CAST(c_acctbal AS DOUBLE) AS x,
-        |    CAST(o_totalprice AS DECIMAL(19,6)) AS y,
-        |    c_acctbal >= 0 AS rt
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  WHERE c_acctbal > -1000.0 AND c_acctbal < 1000.0
-        |), s AS (
-        |  SELECT rt, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(round(x, 2) AS DECIMAL(19,6))) AS sx,
-        |    sum(CAST(round(x * x, 4) AS DECIMAL(29,6))) AS sxx,
-        |    sum(y) AS sy,
-        |    sum(CAST(round(x * CAST(y AS DOUBLE), 4)
-        |      AS DECIMAL(29,6))) AS sxy
-        |  FROM j GROUP BY 1
-        |), fit AS (
-        |  SELECT rt, round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 9) AS slope
-        |  FROM s
-        |), fit2 AS (
-        |  SELECT s.rt, s.n AS n, fit.slope AS slope,
-        |    round((CAST(sy AS DOUBLE) - fit.slope
-        |      * CAST(sx AS DOUBLE)) / CAST(s.n AS DOUBLE), 6) AS icpt
-        |  FROM s JOIN fit ON s.rt = fit.rt
-        |), dens AS (
-        |  SELECT CAST(sum(CASE WHEN NOT rt AND x >= -250.0
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS d_l,
-        |    CAST(sum(CASE WHEN rt AND x < 250.0 THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS d_r
-        |  FROM j
-        |)
-        |SELECT l.n AS n_l, r.n AS n_r, l.icpt AS icpt_l,
-        |  r.icpt AS icpt_r, l.slope AS slope_l, r.slope AS slope_r,
-        |  round(r.icpt - l.icpt, 6) AS tau, d_l, d_r,
-        |  round(CAST(d_r AS DOUBLE) / CAST(d_l AS DOUBLE), 6)
-        |    AS density_ratio
-        |FROM (SELECT * FROM fit2 WHERE NOT rt) l,
-        |  (SELECT * FROM fit2 WHERE rt) r, dens""".stripMargin,
-
-    "q281_kneser_ney" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, $toksSql AS tk,
-         |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'
-         |      AS is_train
-         |  FROM documents
-         |), bit AS (
-         |  SELECT tk[CAST(i + 1 AS INT)] AS w1,
-         |    tk[CAST(i + 2 AS INT)] AS w2
-         |  FROM (SELECT tk, unnest(range(0, greatest(len(tk) - 1, 0)))
-         |          AS i
-         |        FROM base WHERE is_train)
-         |), c2t AS MATERIALIZED (
-         |  SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c2
-         |  FROM bit GROUP BY 1, 2
-         |), ctx AS (
-         |  SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1,
-         |    CAST(COUNT(*) AS BIGINT) AS n1f
-         |  FROM c2t GROUP BY 1
-         |), cont AS (
-         |  SELECT w2, CAST(COUNT(*) AS BIGINT) AS n1b FROM c2t
-         |  GROUP BY 1
-         |), btot AS (SELECT CAST(COUNT(*) AS BIGINT) AS bb FROM c2t),
-         |bie AS (
-         |  SELECT tk[CAST(i + 1 AS INT)] AS w1,
-         |    tk[CAST(i + 2 AS INT)] AS w2
-         |  FROM (SELECT tk, unnest(range(0, greatest(len(tk) - 1, 0)))
-         |          AS i
-         |        FROM base WHERE NOT is_train)
-         |), held AS (
-         |  SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS tf
-         |  FROM bie GROUP BY 1, 2
-         |), sc AS (
-         |  SELECT tf, n1b,
-         |    CASE WHEN c1 IS NULL
-         |      THEN CAST(n1b AS DOUBLE) / CAST(bb AS DOUBLE)
-         |      ELSE greatest(CAST(coalesce(c2, 0) AS DOUBLE) - 0.75,
-         |            0.0) / CAST(c1 AS DOUBLE)
-         |        + 0.75 * CAST(n1f AS DOUBLE) / CAST(c1 AS DOUBLE)
-         |          * (CAST(n1b AS DOUBLE) / CAST(bb AS DOUBLE))
-         |      END AS p
-         |  FROM held LEFT JOIN c2t USING (w1, w2)
-         |  LEFT JOIN ctx USING (w1) LEFT JOIN cont USING (w2), btot
-         |), agg AS (
-         |  SELECT CAST(SUM(tf) AS BIGINT) AS n_held_bigrams,
-         |    CAST(SUM(CASE WHEN n1b IS NOT NULL THEN tf ELSE 0 END)
-         |      AS BIGINT) AS n_scored,
-         |    CAST(SUM(CASE WHEN n1b IS NULL THEN tf ELSE 0 END)
-         |      AS BIGINT) AS n_oov,
-         |    SUM(CASE WHEN n1b IS NOT NULL
-         |      THEN CAST(round(CAST(tf AS DOUBLE) * ln(p), 9)
-         |        AS DECIMAL(38,9))
-         |      ELSE CAST(0 AS DECIMAL(38,9)) END) AS sl
-         |  FROM sc
-         |)
-         |SELECT n_held_bigrams, n_scored, n_oov,
-         |  round(CAST(n_oov AS DOUBLE) / CAST(n_held_bigrams AS DOUBLE),
-         |    6) AS oov_rate,
-         |  round(-CAST(sl AS DOUBLE) / CAST(n_scored AS DOUBLE), 6)
-         |    AS xent_kn,
-         |  round(exp(-CAST(sl AS DOUBLE) / CAST(n_scored AS DOUBLE)), 6)
-         |    AS ppl_kn
-         |FROM agg""".stripMargin,
-
-    "q282_qlm_retrieval" ->
-      qlmSql("('spark'), ('join'), ('window')", 20),
-
-    "q283_filter_ablation" ->
-      s"""WITH f AS (
-         |  SELECT length(text) >= 200 AS f_len,
-         |    CASE WHEN length(text) > 0
-         |      THEN length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-         |          * 10
-         |        >= length(text) * 6
-         |      ELSE false END AS f_alpha,
-         |    len($toksSql) >= 30 AS f_tok,
-         |    CAST(length(text) AS BIGINT) AS nc,
-         |    CAST(len($toksSql) AS BIGINT) AS ntk
-         |  FROM documents
-         |), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS tot FROM f),
-         |cub AS (
-         |  SELECT coalesce(CAST(f_len AS VARCHAR), 'all') AS f_len,
-         |    coalesce(CAST(f_alpha AS VARCHAR), 'all') AS f_alpha,
-         |    coalesce(CAST(f_tok AS VARCHAR), 'all') AS f_tok,
-         |    CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |    CAST(SUM(nc) AS BIGINT) AS n_chars,
-         |    CAST(SUM(ntk) AS BIGINT) AS n_tokens,
-         |    round(CAST(COUNT(*) AS DOUBLE) / CAST(max(tot) AS DOUBLE),
-         |      6) AS share
-         |  FROM f, tot
-         |  GROUP BY CUBE (f_len, f_alpha, f_tok)
-         |)
-         |SELECT * FROM cub ORDER BY f_len, f_alpha, f_tok""".stripMargin,
-
-    "q284_ope_snips" ->
-      """WITH base AS MATERIALIZED (
-        |  SELECT CAST(hour(ts) AS BIGINT) // 6 AS ctx,
-        |    event_type AS a,
-        |    substr(md5('ope|' || CAST(user_id AS VARCHAR)), 1, 1) < 'c'
-        |      AS is_train,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(value AS DECIMAL(19,6))) AS sv
-        |  FROM events GROUP BY 1, 2, 3
-        |), tr AS (
-        |  SELECT ctx, a, n,
-        |    round(CAST(sv AS DOUBLE) / CAST(n AS DOUBLE), 9) AS mt
-        |  FROM base WHERE is_train
-        |), trc AS (
-        |  SELECT ctx, CAST(SUM(n) AS BIGINT) AS nc FROM tr GROUP BY 1
-        |), plog AS (
-        |  SELECT tr.ctx, a, mt,
-        |    round(CAST(n AS DOUBLE) / CAST(nc AS DOUBLE), 9) AS pl
-        |  FROM tr JOIN trc ON tr.ctx = trc.ctx
-        |), mx AS (
-        |  SELECT ctx, max(mt) AS mmax FROM tr GROUP BY 1
-        |), pol AS (
-        |  SELECT tr.ctx, min(a) AS pi_a
-        |  FROM tr JOIN mx ON tr.ctx = mx.ctx AND tr.mt = mx.mmax
-        |  GROUP BY 1
-        |), held AS (
-        |  SELECT ctx, a, n, sv FROM base WHERE NOT is_train
-        |), htot AS (
-        |  SELECT CAST(SUM(n) AS BIGINT) AS nh, SUM(sv) AS svh FROM held
-        |), ttot AS (
-        |  SELECT CAST(SUM(n) AS BIGINT) AS n_train FROM base
-        |  WHERE is_train
-        |), m AS (
-        |  SELECT held.ctx, held.n, held.sv, plog.pl
-        |  FROM held JOIN pol ON held.ctx = pol.ctx
-        |    AND held.a = pol.pi_a
-        |  JOIN plog ON held.ctx = plog.ctx AND held.a = plog.a
-        |), ips AS (
-        |  SELECT
-        |    SUM(CAST(round(CAST(sv AS DOUBLE) * round(1.0 / pl, 9), 6)
-        |      AS DECIMAL(29,6))) AS swr,
-        |    SUM(CAST(round(CAST(n AS DOUBLE) * round(1.0 / pl, 9), 6)
-        |      AS DECIMAL(29,6))) AS swn,
-        |    SUM(CAST(round(CAST(n AS DOUBLE) * round(1.0 / pl, 9)
-        |      * round(1.0 / pl, 9), 6) AS DECIMAL(29,6))) AS swn2
-        |  FROM m
-        |), hc AS (
-        |  SELECT ctx, CAST(SUM(n) AS BIGINT) AS nhc FROM held
-        |  GROUP BY 1
-        |), dm AS (
-        |  SELECT SUM(CAST(round(CAST(nhc AS DOUBLE) * tr.mt, 6)
-        |    AS DECIMAL(29,6))) AS sdm
-        |  FROM hc JOIN pol ON hc.ctx = pol.ctx
-        |  JOIN tr ON tr.ctx = pol.ctx AND tr.a = pol.pi_a
-        |)
-        |SELECT n_train, nh AS n_held,
-        |  round(CAST(svh AS DOUBLE) / CAST(nh AS DOUBLE), 6)
-        |    AS value_onpolicy,
-        |  round(CAST(sdm AS DOUBLE) / CAST(nh AS DOUBLE), 6)
-        |    AS value_dm,
-        |  round(CAST(swr AS DOUBLE) / CAST(nh AS DOUBLE), 6)
-        |    AS value_ips,
-        |  round(CAST(swr AS DOUBLE) / CAST(swn AS DOUBLE), 6)
-        |    AS value_snips,
-        |  round(CAST(swn AS DOUBLE) * CAST(swn AS DOUBLE)
-        |    / CAST(swn2 AS DOUBLE), 6) AS ess
-        |FROM ips, dm, htot, ttot""".stripMargin,
-
-    "q285_bradley_terry" -> {
-      // unrolled 3-round Hunter-MM replay; each round's terms round(9)
-      // to DECIMAL(19,9) before summing, exactly as the Spark loop
-      val rounds = (1 to 3).map { r =>
-        val prev = s"s${r - 1}"
-        s"""d$r AS (
-           |  SELECT sym.i,
-           |    SUM(CAST(round(CAST(n AS DOUBLE) / (si.st + sj.st), 9)
-           |      AS DECIMAL(19,9))) AS dn
-           |  FROM sym JOIN $prev si ON sym.i = si.i
-           |    JOIN $prev sj ON sym.j = sj.i
-           |  GROUP BY 1
-           |), r$r AS (
-           |  SELECT d$r.i,
-           |    round(CAST(wins AS DOUBLE) / CAST(dn AS DOUBLE), 9) AS sr
-           |  FROM d$r JOIN wt ON d$r.i = wt.i
-           |), t$r AS (
-           |  SELECT SUM(CAST(sr AS DECIMAL(19,9))) AS tot FROM r$r
-           |), s$r AS (
-           |  SELECT i, round(sr * nt / CAST(tot AS DOUBLE), 9) AS st
-           |  FROM r$r, t$r, ntc
-           |)""".stripMargin
-      }.mkString(", ")
-      s"""WITH ud AS (
-         |  SELECT user_id, date_trunc('day', ts) AS d, event_type,
-         |    sum(CAST(value AS DECIMAL(19,6))) AS sv
-         |  FROM events GROUP BY 1, 2, 3
-         |), pair AS MATERIALIZED (
-         |  SELECT a.event_type AS i, b.event_type AS j,
-         |    CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN a.sv > b.sv THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS wi,
-         |    CAST(sum(CASE WHEN b.sv > a.sv THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS wj
-         |  FROM ud a JOIN ud b ON a.user_id = b.user_id AND a.d = b.d
-         |    AND a.event_type < b.event_type
-         |  WHERE a.sv <> b.sv GROUP BY 1, 2
-         |), sym AS MATERIALIZED (
-         |  SELECT i, j, n, wi AS w FROM pair
-         |  UNION ALL SELECT j, i, n, wj FROM pair
-         |), wt AS MATERIALIZED (
-         |  SELECT i, CAST(SUM(w) AS BIGINT) AS wins,
-         |    CAST(SUM(n) AS BIGINT) AS comparisons
-         |  FROM sym GROUP BY 1
-         |), ntc AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nt FROM wt),
-         |s0 AS (SELECT i, CAST(1.0 AS DOUBLE) AS st FROM wt),
-         |$rounds
-         |SELECT wt.i AS event_type, wins, comparisons,
-         |  round(st, 6) AS strength
-         |FROM wt JOIN s3 ON wt.i = s3.i
-         |ORDER BY strength DESC, event_type""".stripMargin
-    },
-
-    "q288_feature_hash_audit" -> {
-      def audit(d: Int): String =
-        s"""  SELECT CAST($d AS BIGINT) AS dims,
-           |    CAST(SUM(nt) AS BIGINT) AS n_terms,
-           |    CAST(COUNT(*) AS BIGINT) AS buckets_used,
-           |    CAST(SUM(CASE WHEN nt >= 2 THEN nt ELSE 0 END) AS BIGINT)
-           |      AS collided_terms,
-           |    CAST(MAX(nt) AS BIGINT) AS max_bucket_terms,
-           |    round(CAST(SUM(CASE WHEN nt >= 2 THEN bf ELSE 0 END)
-           |        AS DOUBLE) / CAST(SUM(bf) AS DOUBLE), 6)
-           |      AS collision_mass
-           |  FROM (
-           |    SELECT (list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-           |        (strpos('0123456789abcdef',
-           |          substr(md5(tk), i + 1, 1)) - 1)
-           |        for i in range(0, 8)]) % $d) AS bucket,
-           |      CAST(count(*) AS BIGINT) AS nt,
-           |      CAST(sum(freq) AS BIGINT) AS bf
-           |    FROM tf GROUP BY 1)""".stripMargin
-      s"""WITH tf AS MATERIALIZED (
-         |  SELECT t AS tk, CAST(count(*) AS BIGINT) AS freq
-         |  FROM (SELECT unnest($toksSql) AS t FROM documents)
-         |  GROUP BY 1
-         |), a1 AS (
-         |${audit(256)}
-         |), a2 AS (
-         |${audit(4096)}
-         |)
-         |SELECT * FROM a1 UNION ALL SELECT * FROM a2 ORDER BY dims""".stripMargin
-    },
-
-    "q290_rbo_rankers" -> {
-      val wvals = rboWeights.map { case (m, c) => s"($m, $c)" }
-        .mkString(", ")
-      val sets = Seq(
-        ("q1", "'spark', 'join', 'window'",
-          "('spark'), ('join'), ('window')"),
-        ("q2", "'merge', 'sort', 'hash'", "('merge'), ('sort'), ('hash')"),
-        ("q3", "'scan', 'filter', 'batch'",
-          "('scan'), ('filter'), ('batch')"))
-      val aSql = sets.map { case (label, inList, _) =>
-        s"""  SELECT '$label' AS q, doc_id, rk AS ra
-           |  FROM (${bm25Sql(inList, 10)})""".stripMargin
-      }.mkString("\n  UNION ALL\n")
-      val bSql = sets.map { case (label, _, valuesList) =>
-        s"""  SELECT '$label' AS q, doc_id, rk AS rb
-           |  FROM (${qlmSql(valuesList, 10)})""".stripMargin
-      }.mkString("\n  UNION ALL\n")
-      s"""WITH a AS MATERIALIZED (
-         |$aSql
-         |), b AS MATERIALIZED (
-         |$bSql
-         |), w(m, c) AS (VALUES $wvals),
-         |mm AS (
-         |  SELECT a.q, greatest(ra, rb) AS m
-         |  FROM a JOIN b ON a.q = b.q AND a.doc_id = b.doc_id
-         |)
-         |SELECT q, CAST(count(*) AS BIGINT) AS n_common,
-         |  round(CAST(SUM(CAST(c AS DECIMAL(14,12))) AS DOUBLE), 6)
-         |    AS rbo
-         |FROM mm JOIN w ON mm.m = w.m
-         |GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    "q286_nn_descent" -> nnDescentSql(10, 3, 3, 16, 5),
-
-    "q295_nn_graph_append" -> nnInsertSql(10, 3, 3, 16, 5),
-
-    "q297_voptimal_hist" ->
-      s"""WITH $orderGridCtes, $vOptDpCtes
-         |SELECT CAST(bucket AS BIGINT) AS bucket,
-         |  CAST(seg_lo AS BIGINT) AS seg_lo,
-         |  CAST(seg_hi AS BIGINT) AS seg_hi,
-         |  gv AS v_hi, CAST(ph.p - pl.p AS BIGINT) AS n_rows,
-         |  round(s.sse, 6) AS sse
-         |FROM bounds JOIN sse s ON s.a = seg_lo AND s.b = seg_hi
-         |JOIN pre ph ON ph.t = seg_hi
-         |JOIN pre pl ON pl.t = seg_lo - 1
-         |JOIN grid ON grid.t = seg_hi
-         |ORDER BY bucket""".stripMargin,
-
-    "q305_voptimal_merge" ->
-      s"""WITH $orderGridCtes, $vOptDpCtes,
-         |svals AS (
-         |  SELECT CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-         |      (strpos('0123456789abcdef',
-         |        substr(md5(CAST(o_orderkey AS VARCHAR)), i + 1, 1)) - 1)
-         |      for i in range(0, 8)]) AS BIGINT) % 4 AS shard,
-         |    CAST(o_totalprice * 100 AS BIGINT) AS v
-         |  FROM orders
-         |), shard_hist AS MATERIALIZED (
-         |  SELECT shard, v, CAST(count(*) AS BIGINT) AS c FROM svals
-         |  GROUP BY 1, 2
-         |), hist_m AS MATERIALIZED (
-         |  SELECT v, CAST(SUM(c) AS BIGINT) AS c FROM shard_hist
-         |  GROUP BY 1
-         |), ${gridCtes("_m")}, ${dpCtes("_m")},
-         |res AS (
-         |  SELECT bucket, CAST(seg_lo AS BIGINT) AS seg_lo,
-         |    CAST(seg_hi AS BIGINT) AS seg_hi, gv AS v_hi,
-         |    CAST(ph.p - pl.p AS BIGINT) AS n_rows,
-         |    round(s.sse, 6) AS sse
-         |  FROM bounds JOIN sse s ON s.a = seg_lo AND s.b = seg_hi
-         |  JOIN pre ph ON ph.t = seg_hi
-         |  JOIN pre pl ON pl.t = seg_lo - 1
-         |  JOIN grid ON grid.t = seg_hi
-         |), res_m AS (
-         |  SELECT bucket, CAST(seg_lo AS BIGINT) AS m_seg_lo,
-         |    CAST(seg_hi AS BIGINT) AS m_seg_hi, gv AS m_v_hi,
-         |    CAST(ph.p - pl.p AS BIGINT) AS m_n_rows,
-         |    round(s.sse, 6) AS m_sse
-         |  FROM bounds_m JOIN sse_m s ON s.a = seg_lo AND s.b = seg_hi
-         |  JOIN pre_m ph ON ph.t = seg_hi
-         |  JOIN pre_m pl ON pl.t = seg_lo - 1
-         |  JOIN grid_m ON grid_m.t = seg_hi
-         |)
-         |SELECT CAST(bucket AS BIGINT) AS bucket, seg_lo, seg_hi, v_hi,
-         |  n_rows, sse, m_seg_lo, m_seg_hi, m_v_hi, m_n_rows, m_sse,
-         |  (seg_lo IS NOT DISTINCT FROM m_seg_lo
-         |    AND seg_hi IS NOT DISTINCT FROM m_seg_hi
-         |    AND v_hi IS NOT DISTINCT FROM m_v_hi
-         |    AND n_rows IS NOT DISTINCT FROM m_n_rows
-         |    AND sse IS NOT DISTINCT FROM m_sse) AS merge_exact
-         |FROM res FULL JOIN res_m USING (bucket)
-         |ORDER BY bucket""".stripMargin,
-
-    "q306_grid_merge_audit" ->
-      s"""WITH $orderGridCtes,
-         |svals AS (
-         |  SELECT CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-         |      (strpos('0123456789abcdef',
-         |        substr(md5(CAST(o_orderkey AS VARCHAR)), i + 1, 1)) - 1)
-         |      for i in range(0, 8)]) AS BIGINT) % 4 AS shard,
-         |    CAST(o_totalprice * 100 AS BIGINT) AS v
-         |  FROM orders
-         |), shist AS MATERIALIZED (
-         |  SELECT shard, v, CAST(count(*) AS BIGINT) AS c FROM svals
-         |  GROUP BY 1, 2
-         |), scum AS MATERIALIZED (
-         |  SELECT shard, v, c, CAST(SUM(c) OVER (PARTITION BY shard
-         |    ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-         |  FROM shist
-         |), stot AS (
-         |  SELECT shard, CAST(SUM(c) AS BIGINT) AS n, MIN(v) - 1 AS fl
-         |  FROM shist GROUP BY 1
-         |), sgrid AS MATERIALIZED (
-         |  SELECT st.shard, t, MIN(v) AS gv
-         |  FROM ts, stot st, scum sc
-         |  WHERE sc.shard = st.shard AND sc.cum >= (t * st.n + 31) // 32
-         |  GROUP BY 1, 2
-         |), cellsraw AS (
-         |  SELECT g.shard,
-         |    coalesce(lag(gv) OVER (PARTITION BY g.shard ORDER BY g.t),
-         |      fl) AS lo,
-         |    gv AS hi,
-         |    cumhi - coalesce(lag(cumhi) OVER (PARTITION BY g.shard
-         |      ORDER BY g.t), 0) AS f
-         |  FROM (SELECT sg.shard, sg.t, sg.gv, sc.cum AS cumhi
-         |        FROM sgrid sg JOIN scum sc
-         |        ON sc.shard = sg.shard AND sc.v = sg.gv) g
-         |  JOIN stot ON stot.shard = g.shard
-         |), cells AS (SELECT * FROM cellsraw WHERE f > 0 AND hi > lo),
-         |bnds AS (
-         |  SELECT DISTINCT b FROM (
-         |    SELECT lo AS b FROM cells
-         |    UNION ALL SELECT hi FROM cells) u
-         |), iv AS (
-         |  SELECT a, b FROM (
-         |    SELECT lag(b) OVER (ORDER BY b) AS a, b FROM bnds) q
-         |  WHERE a IS NOT NULL
-         |), contribs AS (
-         |  SELECT a, b, CAST(round((CAST(f AS DOUBLE)
-         |      * CAST(b - a AS DOUBLE)) / CAST(hi - lo AS DOUBLE), 9)
-         |    AS DECIMAL(19,9)) AS m
-         |  FROM cells JOIN iv ON a >= lo AND b <= hi
-         |), masses AS MATERIALIZED (
-         |  SELECT a, b, CAST(SUM(m) AS DOUBLE) AS mass FROM contribs
-         |  GROUP BY 1, 2
-         |), thr3 AS (SELECT t AS t_ref, gv AS x FROM grid
-         |  WHERE t IN (8, 16, 24)),
-         |ntot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM hist),
-         |nm AS (SELECT CAST(SUM(CAST(mass AS DECIMAL(19,9))) AS DOUBLE)
-         |  AS nmass FROM masses),
-         |ex AS (
-         |  SELECT t_ref, x, CAST(coalesce(SUM(c), 0) AS BIGINT) AS egt
-         |  FROM thr3 LEFT JOIN hist ON v > x GROUP BY 1, 2
-         |), mg AS (
-         |  SELECT t_ref, x, CAST(SUM(
-         |    CASE WHEN a >= x THEN CAST(mass AS DECIMAL(19,9))
-         |      WHEN b > x THEN CAST(round((mass * CAST(b - x AS DOUBLE))
-         |        / CAST(b - a AS DOUBLE), 9) AS DECIMAL(19,9))
-         |      ELSE CAST(0 AS DECIMAL(19,9)) END) AS DOUBLE) AS mgt
-         |  FROM thr3, masses GROUP BY 1, 2
-         |)
-         |SELECT CAST(t_ref AS BIGINT) AS t_ref, x AS threshold_v,
-         |  round(CAST(egt AS DOUBLE) / CAST(n AS DOUBLE), 6)
-         |    AS exact_gt_frac,
-         |  round(mgt / nmass, 6) AS merged_gt_frac,
-         |  CASE WHEN egt > 0 THEN
-         |    round(abs(mgt / nmass - CAST(egt AS DOUBLE) / CAST(n AS DOUBLE))
-         |      / (CAST(egt AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-         |  ELSE NULL END AS rel_err
-         |FROM ex JOIN mg USING (t_ref, x), ntot, nm
-         |ORDER BY t_ref""".stripMargin,
-
-    // q54's recursive-CTE component replay plus the two md5-bucket split
-    // assignments; pairs are the exact all-pairs >= 0.5 set, which the
-    // fast LSH path's confirmed pairs equal on this corpus (q39)
-    "q307_leakage_safe_split" ->
-      """WITH RECURSIVE tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS shingles
-        |  FROM tk
-        |), prs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
-        |          AS DOUBLE) >= 0.5
-        |), edges AS (
-        |  SELECT a_id AS s, b_id AS d FROM prs
-        |  UNION SELECT b_id, a_id FROM prs
-        |), reach(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION
-        |  SELECT r.s, e.d FROM reach r JOIN edges e ON e.s = r.d
-        |), clu AS (
-        |  SELECT s AS doc_id, least(s, min(d)) AS cl FROM reach GROUP BY s
-        |), asg AS (
-        |  SELECT d.doc_id,
-        |    CASE WHEN substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 1) < 'c'
-        |      THEN 'train' ELSE 'test' END AS naive_split,
-        |    CASE WHEN substring(md5(CAST(COALESCE(c.cl, d.doc_id)
-        |        AS VARCHAR)), 1, 1) < 'c'
-        |      THEN 'train' ELSE 'test' END AS safe_split
-        |  FROM documents d LEFT JOIN clu c USING (doc_id)
-        |)
-        |SELECT 'by_cluster' AS method,
-        |  CAST(SUM(CASE WHEN safe_split = 'train' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_train,
-        |  CAST(SUM(CASE WHEN safe_split = 'test' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_test,
-        |  CAST(COALESCE((SELECT SUM(CASE WHEN sa.safe_split <> sb.safe_split
-        |      THEN 1 ELSE 0 END)
-        |    FROM prs p JOIN asg sa ON p.a_id = sa.doc_id
-        |    JOIN asg sb ON p.b_id = sb.doc_id), 0) AS BIGINT) AS n_straddle
-        |FROM asg
-        |UNION ALL
-        |SELECT 'naive_by_doc',
-        |  CAST(SUM(CASE WHEN naive_split = 'train' THEN 1 ELSE 0 END)
-        |    AS BIGINT),
-        |  CAST(SUM(CASE WHEN naive_split = 'test' THEN 1 ELSE 0 END)
-        |    AS BIGINT),
-        |  CAST(COALESCE((SELECT SUM(CASE WHEN sa.naive_split
-        |      <> sb.naive_split THEN 1 ELSE 0 END)
-        |    FROM prs p JOIN asg sa ON p.a_id = sa.doc_id
-        |    JOIN asg sb ON p.b_id = sb.doc_id), 0) AS BIGINT)
-        |FROM asg
-        |ORDER BY method""".stripMargin,
-
-    // q307's component replay, read per source: train shares under both
-    // assignments and their deviation from each method's overall share
-    "q308_split_stratification" ->
-      """WITH RECURSIVE tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(raw) < 3
-        |      THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END) AS shingles
-        |  FROM tk
-        |), prs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
-        |          AS DOUBLE) >= 0.5
-        |), edges AS (
-        |  SELECT a_id AS s, b_id AS d FROM prs
-        |  UNION SELECT b_id, a_id FROM prs
-        |), reach(s, d) AS (
-        |  SELECT s, d FROM edges
-        |  UNION
-        |  SELECT r.s, e.d FROM reach r JOIN edges e ON e.s = r.d
-        |), clu AS (
-        |  SELECT s AS doc_id, least(s, min(d)) AS cl FROM reach GROUP BY s
-        |), asg AS (
-        |  SELECT d.doc_id, d.source,
-        |    CASE WHEN substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 1) < 'c'
-        |      THEN 'train' ELSE 'test' END AS naive_split,
-        |    CASE WHEN substring(md5(CAST(COALESCE(c.cl, d.doc_id)
-        |        AS VARCHAR)), 1, 1) < 'c'
-        |      THEN 'train' ELSE 'test' END AS safe_split
-        |  FROM documents d LEFT JOIN clu c USING (doc_id)
-        |), per AS (
-        |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |    round(CAST(SUM(CASE WHEN naive_split = 'train' THEN 1 ELSE 0
-        |      END) AS DOUBLE) / COUNT(*), 6) AS train_frac_naive,
-        |    round(CAST(SUM(CASE WHEN safe_split = 'train' THEN 1 ELSE 0
-        |      END) AS DOUBLE) / COUNT(*), 6) AS train_frac_cluster
-        |  FROM asg GROUP BY 1
-        |), o AS (
-        |  SELECT
-        |    round(CAST(SUM(CASE WHEN naive_split = 'train' THEN 1 ELSE 0
-        |      END) AS DOUBLE) / COUNT(*), 6) AS o_naive,
-        |    round(CAST(SUM(CASE WHEN safe_split = 'train' THEN 1 ELSE 0
-        |      END) AS DOUBLE) / COUNT(*), 6) AS o_cluster
-        |  FROM asg
-        |)
-        |SELECT source, n_docs, train_frac_naive, train_frac_cluster,
-        |  round(abs(train_frac_naive - o_naive), 6) AS dev_naive,
-        |  round(abs(train_frac_cluster - o_cluster), 6) AS dev_cluster
-        |FROM per, o ORDER BY source""".stripMargin,
-
-    // per-shard top-k-with-threshold summaries merged; the q305 oracle's
-    // md5 shard replay, then the bracket per exact global top-10 token
-    "q309_heavyhitter_merge" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS raw
-        |  FROM documents
-        |), toks AS (
-        |  SELECT CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |      (strpos('0123456789abcdef',
-        |        substr(md5(CAST(doc_id AS VARCHAR)), i + 1, 1)) - 1)
-        |      for i in range(0, 8)]) AS BIGINT) % 4 AS shard,
-        |    unnest(raw) AS tok
-        |  FROM tk
-        |), sc AS MATERIALIZED (
-        |  SELECT shard, tok, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM toks GROUP BY 1, 2
-        |), rk AS MATERIALIZED (
-        |  SELECT shard, tok, c,
-        |    row_number() OVER (PARTITION BY shard
-        |      ORDER BY c DESC, tok ASC) AS rk
-        |  FROM sc
-        |), kept AS (
-        |  SELECT shard, tok, c FROM rk WHERE rk <= 32
-        |), errall AS (
-        |  SELECT s.shard, COALESCE(e.err, 0) AS err
-        |  FROM (SELECT DISTINCT shard FROM rk) s
-        |  LEFT JOIN (SELECT shard, MAX(c) AS err FROM rk
-        |    WHERE rk > 32 GROUP BY 1) e USING (shard)
-        |), exact AS (
-        |  SELECT tok, CAST(SUM(c) AS BIGINT) AS n FROM sc GROUP BY 1
-        |), top10 AS (
-        |  SELECT tok, n FROM exact ORDER BY n DESC, tok ASC LIMIT 10
-        |)
-        |SELECT t.tok, t.n AS exact_n,
-        |  CAST(SUM(COALESCE(k.c, 0)) AS BIGINT) AS est_lo,
-        |  CAST(SUM(COALESCE(k.c, e.err)) AS BIGINT) AS est_hi,
-        |  (CAST(SUM(COALESCE(k.c, 0)) AS BIGINT) <= t.n
-        |    AND t.n <= CAST(SUM(COALESCE(k.c, e.err)) AS BIGINT))
-        |    AS bracketed,
-        |  round(CAST(SUM(COALESCE(k.c, e.err)) - SUM(COALESCE(k.c, 0))
-        |      AS DOUBLE) / CAST(t.n AS DOUBLE), 6) AS rel_width
-        |FROM top10 t CROSS JOIN errall e
-        |LEFT JOIN kept k ON k.shard = e.shard AND k.tok = t.tok
-        |GROUP BY t.tok, t.n
-        |ORDER BY exact_n DESC, t.tok ASC""".stripMargin,
-
-    "q310_dedup_threshold_sweep" -> dedupSweepSql,
-
-    "q313_image_thumbnails" ->
-      """SELECT doc_id, CAST(4 AS BIGINT) AS width,
-        |  CAST(4 AS BIGINT) AS height,
-        |  CAST(doc_id % 256 AS BIGINT) AS mean_red, TRUE AS decoded
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q314_video_frame_sample" ->
-      """SELECT doc_id, CAST(f AS INT) AS frame_idx,
-        |  CAST(doc_id % 16 + 2 AS BIGINT) AS width,
-        |  CAST(doc_id % 12 + 2 AS BIGINT) AS height,
-        |  CAST((doc_id * 31 + f * 17) % 256 AS BIGINT) AS red_mean
-        |FROM documents,
-        |  unnest(range(0, CAST(doc_id % 12 + 1 AS BIGINT), 2)) AS t(f)
-        |WHERE doc_id % 3 = 2
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // greedy leftmost non-overlapping occurrence counting IS what a
-    // replace()-based count computes — the oracle replays the automaton
-    // one pattern at a time
-    "q315_blocklist_scan" ->
-      (s"""WITH pats AS (SELECT * FROM (VALUES """ +
-        // '' escaping so a future pattern with an apostrophe breaks the
-        // verify pass at the edit site, not with a DuckDB parse error
-        blocklistPatterns.map(p =>
-          s"('${p.replace("'", "''")}')").mkString(", ") +
-        s""") p(pattern)),
-        |per AS (
-        |  SELECT d.source, p.pattern,
-        |    CAST((length(lower(d.text))
-        |        - length(replace(lower(d.text), p.pattern, '')))
-        |      // length(p.pattern) AS BIGINT) AS h
-        |  FROM documents d CROSS JOIN pats p
-        |)
-        |SELECT source, pattern,
-        |  CAST(SUM(CASE WHEN h > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS docs_hit,
-        |  CAST(SUM(h) AS BIGINT) AS hits
-        |FROM per GROUP BY 1, 2 ORDER BY 1, 2""").stripMargin,
-
-    // same doc_id-keyed noise injection as the Spark side (chr() code
-    // points == the Scala \u escapes), then the same three detectors
-    "q316_encoding_audit" ->
-      """WITH noisy AS (
-        |  SELECT source, text
-        |    || CASE WHEN doc_id % 5 = 0
-        |         THEN ' caf' || chr(195) || chr(169) ELSE '' END
-        |    || CASE WHEN doc_id % 7 = 0
-        |         THEN ' ' || chr(65533) ELSE '' END
-        |    || CASE WHEN doc_id % 11 = 0 THEN chr(7) ELSE '' END AS t
-        |  FROM documents
-        |), flags AS (
-        |  SELECT source,
-        |    CASE WHEN strpos(t, chr(65533)) > 0 THEN 1 ELSE 0 END AS r,
-        |    CASE WHEN regexp_matches(t,
-        |        '[\x00-\x08\x0B\x0C\x0E-\x1F]') THEN 1 ELSE 0 END AS c,
-        |    CASE WHEN regexp_matches(t, chr(195) || '[' || chr(160)
-        |        || '-' || chr(191) || ']') THEN 1 ELSE 0 END AS m
-        |  FROM noisy
-        |), agg AS (
-        |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |    CAST(SUM(r) AS BIGINT) AS repl_docs,
-        |    CAST(SUM(c) AS BIGINT) AS ctrl_docs,
-        |    CAST(SUM(m) AS BIGINT) AS moji_docs,
-        |    CAST(SUM(CASE WHEN r = 0 AND c = 0 AND m = 0
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS clean_docs
-        |  FROM flags GROUP BY source)
-        |SELECT source, n_docs, repl_docs, ctrl_docs, moji_docs,
-        |  clean_docs,
-        |  round(CAST(clean_docs AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-        |    AS clean_rate
-        |FROM agg ORDER BY source""".stripMargin,
-
-    // the q31 quality formula, quartile-quantized, then the q311
-    // integer mixture algebra per cumulative stage pool
-    "q317_curriculum_plan" ->
-      s"""WITH base AS (
-        |  SELECT CAST(len($toksSql) AS BIGINT) AS toks,
-        |    round(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |      * (1.0 - CASE WHEN length(text) = 0 THEN 0.0
-        |          ELSE CAST(length(regexp_replace(text,
-        |              '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-        |            / CAST(length(text) AS DOUBLE) END)
-        |      * (0.5 + (CASE WHEN len($toksSql) = 0 THEN 0.0
-        |          ELSE CAST(len(list_filter($toksSql,
-        |              t -> list_contains($stopwordsSql, lower(t))))
-        |              AS DOUBLE)
-        |            / CAST(len($toksSql) AS DOUBLE) END) / 2.0), 6) AS q
-        |  FROM documents
-        |), tiers AS (
-        |  SELECT LEAST(CAST(floor(q * 4) AS INT), 3) AS tier, toks
-        |  FROM base
-        |), per AS (
-        |  SELECT tier, CAST(COUNT(*) AS BIGINT) AS td,
-        |    CAST(SUM(toks) AS BIGINT) AS tt
-        |  FROM tiers GROUP BY tier
-        |), stg AS (
-        |  SELECT CAST(st AS INT) AS stage, CAST(4 - st AS INT)
-        |    AS min_tier
-        |  FROM unnest([1, 2, 3, 4]) t(st)
-        |), pool AS (
-        |  SELECT stage, min_tier,
-        |    CAST(COUNT(p.tier) AS BIGINT) AS n_tiers,
-        |    CAST(coalesce(SUM(p.td), 0) AS BIGINT) AS n_docs,
-        |    CAST(coalesce(SUM(p.tt), 0) AS BIGINT) AS tokens_avail
-        |  FROM stg LEFT JOIN per p ON p.tier >= stg.min_tier
-        |  GROUP BY 1, 2
-        |), plan0 AS (
-        |  SELECT *, CAST(2000000 * stage // 10 AS BIGINT)
-        |    AS stage_budget
-        |  FROM pool
-        |), ep AS (
-        |  SELECT *, CASE WHEN tokens_avail > 0
-        |      THEN LEAST((stage_budget + tokens_avail - 1)
-        |        // tokens_avail, 4)
-        |      ELSE 1 END AS epochs
-        |  FROM plan0)
-        |SELECT stage, min_tier, n_tiers, n_docs, tokens_avail,
-        |  stage_budget,
-        |  CASE WHEN tokens_avail > 0
-        |    THEN round(CAST(stage_budget AS DOUBLE)
-        |      / CAST(tokens_avail AS DOUBLE), 6) END AS sampling_rate,
-        |  CAST(epochs AS BIGINT) AS epochs,
-        |  CAST(CASE WHEN tokens_avail > 0
-        |    THEN LEAST(stage_budget, tokens_avail * epochs)
-        |    ELSE 0 END AS BIGINT) AS capped_tokens,
-        |  round(CAST(CASE WHEN tokens_avail > 0
-        |    THEN LEAST(stage_budget, tokens_avail * epochs)
-        |    ELSE 0 END AS DOUBLE) / 2000000.0, 6) AS achievable_share
-        |FROM ep ORDER BY stage""".stripMargin,
-
-    // per-character GROUP BY replay of functions.CharEntropy: round(9)
-    // DECIMAL terms sum exactly (order-independent), round(6) publish
-    "q318_entropy_gate" ->
-      """WITH noisy AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN doc_id % 13 = 0 THEN repeat('spam ', 40)
-        |      ELSE text END AS t
-        |  FROM documents
-        |), chars AS (
-        |  SELECT doc_id, substring(t, CAST(i AS INT), 1) AS ch
-        |  FROM noisy, unnest(range(1, length(t) + 1)) u(i)
-        |), hist AS (
-        |  SELECT doc_id, ch, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM chars GROUP BY 1, 2
-        |), tot AS (
-        |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n FROM hist GROUP BY 1
-        |), ent AS (
-        |  -- ln(x)/ln(2.0), NOT native log2: functions.CharEntropy
-        |  -- computes Math.log(x)/Math.log(2.0), and the pre-round(9)
-        |  -- doubles must come from the SAME formula or a term within
-        |  -- an ulp of a .5e-9 boundary could round apart across engines
-        |  SELECT h.doc_id, round(CAST(SUM(CAST(round(
-        |      (CAST(c AS DOUBLE) / n)
-        |        * (ln(CAST(n AS DOUBLE) / c) / ln(2.0)), 9)
-        |      AS DECIMAL(19,9))) AS DOUBLE), 6) AS h
-        |  FROM hist h JOIN tot USING (doc_id) GROUP BY 1
-        |), perdoc AS (
-        |  SELECT d.source, coalesce(e.h, 0.0) AS h
-        |  FROM noisy d LEFT JOIN ent e USING (doc_id)
-        |)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  round(CAST(SUM(CAST(h AS DECIMAL(38,6))) AS DOUBLE)
-        |    / COUNT(*), 6) AS mean_entropy,
-        |  CAST(SUM(CASE WHEN h < 3.5 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS low_docs
-        |FROM perdoc GROUP BY source ORDER BY source""".stripMargin,
-
-    // exact integer algebra on per-doc token counts x the L grid
-    "q319_seqlen_sweep" ->
-      s"""WITH lens AS (
-        |  SELECT CAST(len($toksSql) AS BIGINT) AS l FROM documents
-        |), grid AS (
-        |  SELECT CAST(g AS BIGINT) AS max_len
-        |  FROM unnest([8, 16, 32, 64, 128]) t(g)
-        |), per AS (
-        |  SELECT max_len,
-        |    CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |    CAST(SUM(CASE WHEN l > max_len THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_truncated,
-        |    CAST(SUM(LEAST(l, max_len)) AS BIGINT) AS tokens_kept,
-        |    CAST(SUM(GREATEST(l - max_len, 0)) AS BIGINT)
-        |      AS tokens_lost,
-        |    CAST(SUM(max_len - LEAST(l, max_len)) AS BIGINT)
-        |      AS pad_waste
-        |  FROM grid CROSS JOIN lens
-        |  GROUP BY 1)
-        |SELECT max_len, n_docs, n_truncated, tokens_kept, tokens_lost,
-        |  pad_waste,
-        |  round(CAST(tokens_kept AS DOUBLE)
-        |    / CAST(tokens_kept + pad_waste AS DOUBLE), 6)
-        |    AS utilization,
-        |  CAST((tokens_kept + max_len - 1) // max_len AS BIGINT)
-        |    AS min_sequences
-        |FROM per ORDER BY max_len""".stripMargin,
-
-    // the scramble (accent/upper/re-punctuate by residue class), the
-    // normalization (lower + diacritic fold + punct squash + collapse),
-    // and then the standard md5-MinHash banded replay over the
-    // NORMALIZED relation — DuckDB regexp_replace needs the explicit
-    // 'g' flag where Spark's replaces globally by default
-    "q320_translit_neardup" ->
-      (minhashVerifiedCteFrom(s"""(
-        |  SELECT doc_id, trim(regexp_replace(regexp_replace(
-        |      translate(lower(
-        |        CASE WHEN doc_id % 3 = 0
-        |          THEN translate(text, 'aeo', 'áéö')
-        |        WHEN doc_id % 3 = 1 THEN upper(text)
-        |        ELSE replace(text, ' ', ', ') END),
-        |      '$translitDia', '$translitFold'),
-        |    '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS text
-        |  FROM documents)""".stripMargin) +
-        """
-        |SELECT a_id, b_id, sim FROM verified WHERE sim >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin),
-
-    "q321_span_scrub" ->
-      """WITH aug AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN doc_id % 7 = 0
-        |      THEN 'subscribe to our newsletter now for updates '
-        |      ELSE '' END
-        |    || coalesce(text, '')
-        |    || CASE WHEN doc_id % 9 = 0
-        |      THEN ' all rights reserved worldwide' ELSE '' END AS text
-        |  FROM documents
-        |), tk AS (
-        |  SELECT doc_id, source,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM aug
-        |), pos AS (
-        |  SELECT doc_id, len(raw) AS m, raw,
-        |    unnest(range(0, len(raw))) AS i
-        |  FROM tk
-        |), grams AS (
-        |  SELECT doc_id, i,
-        |    array_to_string(raw[CAST(i + 1 AS INT):CAST(i + 3 AS INT)],
-        |      ' ') AS gram
-        |  FROM pos WHERE i <= m - 3
-        |), heavy AS (
-        |  SELECT gram FROM grams
-        |  GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 10
-        |), cov AS (
-        |  SELECT DISTINCT g.doc_id, g.i + d.d AS p
-        |  FROM grams g JOIN heavy USING (gram)
-        |  CROSS JOIN (SELECT unnest([0, 1, 2]) AS d) d
-        |), per AS (
-        |  SELECT t.doc_id, t.source, len(t.raw) AS m,
-        |    COALESCE(c.removed, 0) AS removed
-        |  FROM tk t LEFT JOIN
-        |    (SELECT doc_id, COUNT(*) AS removed FROM cov GROUP BY 1) c
-        |    USING (doc_id)
-        |)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CASE WHEN removed > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS docs_touched,
-        |  CAST(SUM(m) AS BIGINT) AS toks_before,
-        |  CAST(SUM(removed) AS BIGINT) AS toks_removed,
-        |  round(CAST(SUM(removed) AS DOUBLE)
-        |    / greatest(CAST(SUM(m) AS DOUBLE), 1.0), 6) AS removal_rate
-        |FROM per GROUP BY source ORDER BY source""".stripMargin,
-
-    // integer (toks, chars) sums per (lang, source); the zero-token
-    // branches are explicit in BOTH engines (the q311 oracle lesson)
-    "q322_fertility_drift" ->
-      """WITH per AS (
-        |  SELECT lang, source,
-        |    CAST(SUM(len(list_filter(regexp_split_to_array(
-        |      coalesce(text, ''), '\s+'), x -> x <> ''))) AS BIGINT)
-        |      AS toks,
-        |    CAST(SUM(length(coalesce(text, ''))) AS BIGINT) AS chars
-        |  FROM documents GROUP BY 1, 2
-        |), ref AS (
-        |  SELECT lang, CASE WHEN SUM(toks) > 0
-        |    THEN round(CAST(SUM(chars) AS DOUBLE)
-        |      / CAST(SUM(toks) AS DOUBLE), 6)
-        |    ELSE 0.0 END AS ref_fertility
-        |  FROM per GROUP BY 1
-        |), f AS (
-        |  SELECT p.lang, p.source, p.toks, p.chars,
-        |    CASE WHEN p.toks > 0
-        |      THEN round(CAST(p.chars AS DOUBLE)
-        |        / CAST(p.toks AS DOUBLE), 6)
-        |      ELSE 0.0 END AS fertility,
-        |    r.ref_fertility
-        |  FROM per p JOIN ref r USING (lang)
-        |)
-        |SELECT lang, source, toks, chars, fertility, ref_fertility,
-        |  CASE WHEN ref_fertility > 0
-        |    THEN round(fertility / ref_fertility, 6) ELSE 0.0 END
-        |    AS ratio,
-        |  (abs(CASE WHEN ref_fertility > 0
-        |    THEN round(fertility / ref_fertility, 6) ELSE 0.0 END
-        |    - 1.0) > 0.02) AS drifted
-        |FROM f ORDER BY lang, source""".stripMargin,
-
-    // the replace()-count replay per (doc, pattern) over the full
-    // 15^3 trigram dictionary; '//' is DuckDB integer division
-    "q323_dict_blocklist" ->
-      s"""WITH pats AS (
-        |  SELECT a.w || ' ' || b.w || ' ' || c.w AS pattern
-        |  FROM (SELECT unnest($dictVocabSql) AS w) a,
-        |       (SELECT unnest($dictVocabSql) AS w) b,
-        |       (SELECT unnest($dictVocabSql) AS w) c
-        |), d AS (
-        |  SELECT source, lower(coalesce(text, '')) AS t FROM documents
-        |), h AS (
-        |  SELECT d.source, p.pattern,
-        |    (length(d.t) - length(replace(d.t, p.pattern, '')))
-        |      // length(p.pattern) AS h
-        |  FROM d CROSS JOIN pats p
-        |)
-        |SELECT source, pattern,
-        |  CAST(SUM(CASE WHEN h > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS docs_hit,
-        |  CAST(SUM(h) AS BIGINT) AS hits
-        |FROM h GROUP BY 1, 2 HAVING SUM(h) > 0
-        |ORDER BY source, pattern""".stripMargin,
-
-    "q324_template_prefixes" ->
-      """WITH aug AS (
-        |  SELECT source, CASE WHEN doc_id % 7 = 0
-        |      THEN 'breaking news update now live ' ELSE '' END
-        |    || coalesce(text, '') AS text
-        |  FROM documents
-        |), pre AS (
-        |  SELECT source, substring(lower(text), 1, 24) AS prefix
-        |  FROM aug
-        |), counts AS (
-        |  SELECT source, prefix, CAST(COUNT(*) AS BIGINT) AS n_docs
-        |  FROM pre GROUP BY 1, 2
-        |), tot AS (
-        |  SELECT source, CAST(COUNT(*) AS BIGINT) AS total
-        |  FROM pre GROUP BY 1
-        |), ranked AS (
-        |  SELECT source, prefix, n_docs,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY n_docs DESC, prefix ASC) AS BIGINT) AS rank
-        |  FROM counts
-        |)
-        |SELECT r.source, r.rank, r.prefix, r.n_docs,
-        |  round(CAST(r.n_docs AS DOUBLE) / CAST(t.total AS DOUBLE), 6)
-        |    AS share
-        |FROM ranked r JOIN tot t USING (source)
-        |WHERE r.rank <= 3 ORDER BY r.source, r.rank""".stripMargin,
-
-    // the content-gate funnel: spam/noise fixture, then the four gate
-    // predicates replayed (token count; the q316 detectors; the q318
-    // per-char entropy chain; multi-phrase containment = the zero-hit
-    // automaton boolean), cascaded with FILTER counts
-    "q325_content_funnel" ->
-      ("""WITH aug AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 13 = 0 THEN repeat('spam ', 40)
-        |      ELSE coalesce(text, '') END
-        |    || CASE WHEN doc_id % 7 = 0
-        |         THEN ' caf' || chr(195) || chr(169) ELSE '' END
-        |    || CASE WHEN doc_id % 9 = 0 THEN chr(7) ELSE '' END
-        |    || CASE WHEN doc_id % 11 = 0
-        |         THEN ' ' || chr(65533) ELSE '' END AS t
-        |  FROM documents
-        |), chars AS (
-        |  SELECT doc_id, substring(t, CAST(i AS INT), 1) AS ch
-        |  FROM aug, unnest(range(1, length(t) + 1)) u(i)
-        |), hist AS (
-        |  SELECT doc_id, ch, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM chars GROUP BY 1, 2
-        |), tot AS (
-        |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n FROM hist GROUP BY 1
-        |), ent AS (
-        |  SELECT h.doc_id, round(CAST(SUM(CAST(round(
-        |      (CAST(c AS DOUBLE) / n)
-        |        * (ln(CAST(n AS DOUBLE) / c) / ln(2.0)), 9)
-        |      AS DECIMAL(19,9))) AS DOUBLE), 6) AS h
-        |  FROM hist h JOIN tot USING (doc_id) GROUP BY 1
-        |), b AS (
-        |  SELECT
-        |    (len(list_filter(regexp_split_to_array(a.t, '\s+'),
-        |      x -> x <> '')) >= 20) AS b1,
-        |    (NOT (strpos(a.t, chr(65533)) > 0
-        |       OR regexp_matches(a.t, '[\x00-\x08\x0B\x0C\x0E-\x1F]')
-        |       OR regexp_matches(a.t, chr(195) || '[' || chr(160)
-        |            || '-' || chr(191) || ']'))) AS b2,
-        |    (COALESCE(e.h, 0.0) >= 3.0) AS b3,
-        |    (NOT (""".stripMargin + funnelBlocklistSql + """)) AS b4
-        |  FROM aug a LEFT JOIN ent e USING (doc_id)
-        |), c AS (
-        |  SELECT count(*) AS s0,
-        |    count(*) FILTER (b1) AS s1,
-        |    count(*) FILTER (b1 AND b2) AS s2,
-        |    count(*) FILTER (b1 AND b2 AND b3) AS s3,
-        |    count(*) FILTER (b1 AND b2 AND b3 AND b4) AS s4
-        |  FROM b
-        |)
-        |SELECT * FROM (
-        |  SELECT 0 AS stage_id, 'total' AS stage, s0 AS surviving,
-        |    CAST(0 AS BIGINT) AS dropped FROM c
-        |  UNION ALL SELECT 1, 'min_tokens', s1, s0 - s1 FROM c
-        |  UNION ALL SELECT 2, 'encoding_clean', s2, s1 - s2 FROM c
-        |  UNION ALL SELECT 3, 'entropy', s3, s2 - s3 FROM c
-        |  UNION ALL SELECT 4, 'blocklist_clean', s4, s3 - s4 FROM c)
-        |ORDER BY stage_id""".stripMargin),
-
-    // dyadic temperature grid: p^T via sqrt chains (IEEE-correctly-
-    // rounded in both engines — deliberately NO pow, whose last ulp is
-    // libm-specific); per-T normalizer summed through DECIMAL(38,20)
-    "q326_temperature_mix" ->
-      s"""WITH base AS (
-        |  SELECT source, CAST(SUM(len($toksSql)) AS BIGINT) AS toks
-        |  FROM documents GROUP BY 1
-        |), tot AS (
-        |  SELECT CAST(SUM(toks) AS BIGINT) AS total_toks FROM base
-        |), grid AS (
-        |  SELECT k, CAST(t AS DOUBLE) AS t
-        |  FROM (VALUES (0, 1.0), (1, 0.5), (2, 0.25)) g(k, t)
-        |), pp AS (
-        |  -- explicit zero branch: an all-empty corpus must take the
-        |  -- same 0.0 path as the Spark side (0/0 would be NaN there
-        |  -- and a NaN-to-DECIMAL cast error here)
-        |  SELECT g.k, g.t, b.source, b.toks,
-        |    CASE WHEN tt.total_toks > 0
-        |      THEN CAST(b.toks AS DOUBLE) / CAST(tt.total_toks AS DOUBLE)
-        |      ELSE 0.0 END AS p
-        |  FROM base b CROSS JOIN tot tt CROSS JOIN grid g
-        |), pw AS (
-        |  SELECT k, t, source, toks, p,
-        |    CASE k WHEN 0 THEN p WHEN 1 THEN sqrt(p)
-        |      ELSE sqrt(sqrt(p)) END AS w
-        |  FROM pp
-        |), sw AS (
-        |  SELECT k, CAST(SUM(CAST(w AS DECIMAL(38,20))) AS DOUBLE) AS sw
-        |  FROM pw GROUP BY 1
-        |), f AS (
-        |  SELECT pw.t, pw.source, pw.toks,
-        |    round(pw.p, 6) AS share_natural,
-        |    CASE WHEN sw.sw > 0 THEN round(pw.w / sw.sw, 6)
-        |      ELSE 0.0 END AS share_sampled
-        |  FROM pw JOIN sw USING (k)
-        |)
-        |SELECT t, source, toks, share_natural, share_sampled,
-        |  CASE WHEN share_natural > 0
-        |    THEN round(share_sampled / share_natural, 6)
-        |    ELSE 0.0 END AS boost
-        |FROM f ORDER BY t DESC, source""".stripMargin,
-
-    "q311_data_recipe" ->
-      """WITH per AS (
-        |  SELECT source, COUNT(*) AS n_docs,
-        |    CAST(SUM(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> x <> ''))) AS BIGINT) AS tokens_avail
-        |  FROM documents GROUP BY source
-        |), g AS (SELECT COUNT(*) AS n_groups FROM per
-        |), plan AS (
-        |  SELECT source, n_docs, tokens_avail,
-        |    CAST(2000000 // n_groups AS BIGINT) AS target_tokens
-        |  FROM per CROSS JOIN g
-        |), ep AS (
-        |  -- tokens_avail = 0 (a source whose docs are all empty) takes
-        |  -- mixturePlan's documented branch: rate NULL, 1 epoch,
-        |  -- 0 capped tokens, share 0 — not a division by zero
-        |  SELECT *, CASE WHEN tokens_avail > 0
-        |      THEN LEAST((target_tokens + tokens_avail - 1)
-        |        // tokens_avail, 4)
-        |      ELSE 1 END AS epochs
-        |  FROM plan)
-        |SELECT source, CAST(n_docs AS BIGINT) AS n_docs, tokens_avail,
-        |  target_tokens,
-        |  CASE WHEN tokens_avail > 0
-        |    THEN round(CAST(target_tokens AS DOUBLE)
-        |      / CAST(tokens_avail AS DOUBLE), 6) END AS sampling_rate,
-        |  CAST(epochs AS BIGINT) AS epochs,
-        |  CAST(CASE WHEN tokens_avail > 0
-        |    THEN LEAST(target_tokens, tokens_avail * epochs)
-        |    ELSE 0 END AS BIGINT) AS capped_tokens,
-        |  round(CAST(CASE WHEN tokens_avail > 0
-        |    THEN LEAST(target_tokens, tokens_avail * epochs)
-        |    ELSE 0 END AS DOUBLE) / 2000000.0, 6) AS achievable_share
-        |FROM ep ORDER BY source""".stripMargin,
-
-    "q303_curation_ablation" -> {
-      def modelSql(name: String, cond: String): String =
-        s"""tr_$name AS (
-           |  SELECT doc_id FROM base WHERE $cond
-           |), c2_$name AS (
-           |  SELECT w1, w2, CAST(SUM(tf) AS BIGINT) AS c2m
-           |  FROM tfb JOIN tr_$name USING (doc_id) GROUP BY 1, 2
-           |), c1_$name AS (
-           |  SELECT w1, CAST(SUM(tf) AS BIGINT) AS c1m
-           |  FROM tfb JOIN tr_$name USING (doc_id) GROUP BY 1
-           |), v_$name AS (
-           |  SELECT CAST(COUNT(DISTINCT tok) AS DOUBLE) AS vs
-           |  FROM (SELECT unnest(tk) AS tok
-           |        FROM base JOIN tr_$name USING (doc_id))
-           |), nt_$name AS (
-           |  SELECT CAST(COUNT(*) AS BIGINT) AS n_train FROM tr_$name
-           |), sc_$name AS (
-           |  SELECT '$name' AS model, MAX(n_train) AS n_train_docs,
-           |    CAST(COUNT(DISTINCT e.doc_id) AS BIGINT) AS n_eval_docs,
-           |    CAST(SUM(tf) AS BIGINT) AS n_eval_bigrams,
-           |    round(-CAST(SUM(CAST(CAST(tf AS DOUBLE)
-           |        * ln((CAST(coalesce(c2m, 0) AS DOUBLE) + 1.0)
-           |          / (CAST(coalesce(c1m, 0) AS DOUBLE) + vs))
-           |      AS DECIMAL(38,6))) AS DOUBLE)
-           |      / CAST(SUM(tf) AS DOUBLE), 6) AS cross_entropy
-           |  FROM evb e LEFT JOIN c2_$name USING (w1, w2)
-           |  LEFT JOIN c1_$name USING (w1), v_$name, nt_$name
-           |)""".stripMargin
-      s"""WITH @CUM@,
-         |spl AS (
-         |  SELECT doc_id,
-         |    substr(md5('cur|' || CAST(doc_id AS VARCHAR)), 1, 1) < 'c'
-         |      AS is_train
-         |  FROM documents
-         |), base AS MATERIALIZED (
-         |  SELECT doc_id, $toksSql AS tk, is_train, c2, c7
-         |  FROM documents JOIN spl USING (doc_id)
-         |  JOIN cum USING (doc_id)
-         |), bi AS (
-         |  SELECT doc_id, tk[CAST(i + 1 AS INT)] AS w1,
-         |    tk[CAST(i + 2 AS INT)] AS w2
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(range(0, greatest(len(tk) - 1, 0))) AS i
-         |        FROM base)
-         |), tfb AS MATERIALIZED (
-         |  SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS tf
-         |  FROM bi GROUP BY 1, 2, 3
-         |), evb AS MATERIALIZED (
-         |  SELECT t.doc_id, w1, w2, tf
-         |  FROM tfb t JOIN base b USING (doc_id)
-         |  WHERE NOT b.is_train AND b.c2
-         |), ${modelSql("curated", "is_train AND c7")},
-         |${modelSql("raw", "is_train")}
-         |SELECT * FROM (
-         |  SELECT * FROM sc_curated UNION ALL SELECT * FROM sc_raw
-         |) ORDER BY model""".stripMargin
-        .replace("@CUM@", funnelCumSql)
-    },
-
-    // Ioffe CWS replay: the same salted-md5 uniforms, Gamma(2,1) algebra
-    // (r = −ln u1 − ln u2), t/ln-a quantization and arg-min tie-break as
-    // Dedup.weightedMinhashSignatures — every libm output round(9)'d
-    // before comparison, so both engines draw identical samples.
-    "q304_weighted_neardup" ->
-      """WITH tf AS MATERIALIZED (
-        |  SELECT id, t, CAST(count(*) AS BIGINT) AS w
-        |  FROM (SELECT doc_id AS id,
-        |          unnest(list_filter(regexp_split_to_array(text, '\s+'),
-        |            x -> x <> '')) AS t
-        |        FROM documents)
-        |  GROUP BY 1, 2
-        |), seeded AS (
-        |  SELECT id, t, w, seed,
-        |    md5(CAST(seed AS VARCHAR) || '|' || t || '|wmh') AS h1,
-        |    md5('wmhb|' || CAST(seed AS VARCHAR) || '|' || t) AS h2
-        |  FROM tf CROSS JOIN (SELECT unnest(range(0, 8)) AS seed)
-        |), us AS (
-        |  SELECT id, t, w, seed,
-        |    (CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |      (strpos('0123456789abcdef', substr(h1, 1 + i, 1)) - 1)
-        |      for i in range(0, 8)]) AS DOUBLE) + 0.5) / 4294967296.0 AS u1,
-        |    (CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |      (strpos('0123456789abcdef', substr(h1, 9 + i, 1)) - 1)
-        |      for i in range(0, 8)]) AS DOUBLE) + 0.5) / 4294967296.0 AS u2,
-        |    (CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |      (strpos('0123456789abcdef', substr(h1, 17 + i, 1)) - 1)
-        |      for i in range(0, 8)]) AS DOUBLE) + 0.5) / 4294967296.0 AS u3,
-        |    (CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |      (strpos('0123456789abcdef', substr(h1, 25 + i, 1)) - 1)
-        |      for i in range(0, 8)]) AS DOUBLE) + 0.5) / 4294967296.0 AS u4,
-        |    (CAST(list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-        |      (strpos('0123456789abcdef', substr(h2, 1 + i, 1)) - 1)
-        |      for i in range(0, 8)]) AS DOUBLE) + 0.5) / 4294967296.0 AS beta
-        |  FROM seeded
-        |), cws AS (
-        |  SELECT id, t, seed,
-        |    round(-ln(u1) - ln(u2), 9) AS r,
-        |    round(ln(-ln(u3) - ln(u4)), 9) AS lnc,
-        |    beta,
-        |    round(ln(CAST(w AS DOUBLE)), 9) AS lnw
-        |  FROM us
-        |), tq AS (
-        |  SELECT id, t, seed, r, lnc, beta,
-        |    CAST(floor(round(lnw / r + beta, 9)) AS BIGINT) AS tq
-        |  FROM cws
-        |), pick AS (
-        |  SELECT id, seed, t, tq,
-        |    row_number() OVER (PARTITION BY id, seed ORDER BY
-        |      round(lnc - r * (CAST(tq AS DOUBLE) + 1.0 - beta), 9), t)
-        |      AS rn
-        |  FROM tq
-        |), sig AS (
-        |  SELECT id, seed, t || '|' || CAST(tq AS VARCHAR) AS skey
-        |  FROM pick WHERE rn = 1
-        |), keyed AS (
-        |  SELECT id, CAST(CAST(seed // 2 AS INT) AS VARCHAR) || '#'
-        |      || max(CASE WHEN seed % 2 = 0 THEN skey END) || '#'
-        |      || max(CASE WHEN seed % 2 = 1 THEN skey END) AS bk
-        |  FROM sig GROUP BY id, seed // 2
-        |), cands AS (
-        |  SELECT DISTINCT a.id AS a_id, b.id AS b_id
-        |  FROM keyed a JOIN keyed b ON a.bk = b.bk AND a.id < b.id
-        |), sums AS (
-        |  SELECT id, CAST(sum(w) AS BIGINT) AS sw FROM tf GROUP BY 1
-        |), sm AS (
-        |  SELECT c.a_id, c.b_id,
-        |    CAST(sum(least(ta.w, tb.w)) AS BIGINT) AS smin
-        |  FROM cands c
-        |  JOIN tf ta ON ta.id = c.a_id
-        |  JOIN tf tb ON tb.id = c.b_id AND tb.t = ta.t
-        |  GROUP BY 1, 2
-        |), outp AS (
-        |  SELECT c.a_id, c.b_id, COALESCE(s.smin, 0) AS smin,
-        |    sa.sw + sb.sw - COALESCE(s.smin, 0) AS smax
-        |  FROM cands c
-        |  LEFT JOIN sm s ON s.a_id = c.a_id AND s.b_id = c.b_id
-        |  JOIN sums sa ON sa.id = c.a_id
-        |  JOIN sums sb ON sb.id = c.b_id
-        |)
-        |SELECT a_id, b_id,
-        |  round(CAST(smin AS DOUBLE) / CAST(smax AS DOUBLE), 6) AS jw
-        |FROM outp WHERE smin * 5 >= 3 * smax
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q301_dup_transitivity" ->
-      """WITH e AS MATERIALIZED (
-        |  SELECT a_id AS u, b_id AS v FROM (@MH@)
-        |), deg AS (
-        |  SELECT n, count(*) AS d
-        |  FROM (SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
-        |  GROUP BY 1
-        |), tri AS (
-        |  SELECT count(*) AS t
-        |  FROM e e1 JOIN e e2 ON e1.v = e2.u
-        |    JOIN e e3 ON e1.u = e3.u AND e2.v = e3.v
-        |), s AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-        |    CAST(SUM(d) // 2 AS BIGINT) AS n_edges,
-        |    CAST(SUM(d * (d - 1) // 2) AS BIGINT) AS n_wedges
-        |  FROM deg
-        |)
-        |SELECT n_nodes, n_edges, n_wedges,
-        |  CAST(t AS BIGINT) AS n_triangles,
-        |  round(3.0 * CAST(t AS DOUBLE) / CAST(n_wedges AS DOUBLE), 6)
-        |    AS global_cc
-        |FROM s, tri""".stripMargin
-        .replace("@MH@", minhashPairsSql),
-
-    "q302_bm25_sweep" -> {
-      val wvals = rboWeights.map { case (m, c) => s"($m, $c)" }
-        .mkString(", ")
-      s"""WITH dl AS MATERIALIZED (
-         |  SELECT doc_id, len($toksSql) AS dl FROM documents
-         |), stats AS (
-         |  SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-         |    CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-         |      AS avgdl
-         |  FROM dl
-         |), tfm AS (
-         |  SELECT doc_id, t, CAST(COUNT(*) AS DOUBLE) AS tf
-         |  FROM (SELECT doc_id, unnest($toksSql) AS t FROM documents)
-         |  WHERE t IN ('spark', 'join', 'window') GROUP BY 1, 2
-         |), dfc AS (
-         |  SELECT t, CAST(COUNT(*) AS DOUBLE) AS df FROM tfm GROUP BY 1
-         |), cfgs(k1, bb) AS (VALUES (0.6, 0.25), (0.6, 0.75),
-         |  (1.2, 0.25), (1.2, 0.75), (2.0, 0.25), (2.0, 0.75)),
-         |scored AS (
-         |  SELECT k1, bb, tfm.doc_id,
-         |    ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-         |      * (tf * (k1 + 1.0) / (tf + k1 * (1.0 - bb
-         |        + bb * CAST(dl.dl AS DOUBLE) / avgdl))) AS s
-         |  FROM tfm JOIN dfc USING (t) JOIN dl USING (doc_id)
-         |  CROSS JOIN stats CROSS JOIN cfgs
-         |), agg AS (
-         |  SELECT k1, bb, doc_id,
-         |    round(CAST(SUM(CAST(s AS DECIMAL(38,6))) AS DOUBLE), 6)
-         |      AS score
-         |  FROM scored GROUP BY 1, 2, 3
-         |), ranked AS MATERIALIZED (
-         |  SELECT k1, bb, doc_id, rk FROM (
-         |    SELECT k1, bb, doc_id,
-         |      CAST(row_number() OVER (PARTITION BY k1, bb
-         |        ORDER BY score DESC, doc_id) AS INT) AS rk
-         |    FROM agg)
-         |  WHERE rk <= 10
-         |), base AS (
-         |  SELECT doc_id, rk AS rb FROM ranked
-         |  WHERE k1 = 1.2 AND bb = 0.75
-         |), w(m, c) AS (VALUES $wvals)
-         |SELECT r.k1, r.bb, CAST(count(*) AS BIGINT) AS n_common,
-         |  round(CAST(SUM(CAST(c AS DECIMAL(14,12))) AS DOUBLE), 6)
-         |    AS rbo_vs_default
-         |FROM ranked r JOIN base USING (doc_id)
-         |JOIN w ON w.m = greatest(r.rk, rb)
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-
-    "q300_pipeline_funnel" -> {
-      val aggCols = (1 to 7).map(i =>
-        s"""    SUM(CASE WHEN c$i THEN 1 ELSE 0 END) AS d$i,
-           |    SUM(CASE WHEN c$i THEN ntk ELSE 0 END) AS t$i"""
-          .stripMargin).mkString(",\n")
-      val names = Seq("raw", "gates", "exact_dedup", "near_dup",
-        "decontaminate", "lang_en", "quality")
-      val rows = names.zipWithIndex.map { case (nm, idx) =>
-        val i = idx + 1
-        s"""  SELECT CAST($i AS BIGINT) AS stage, '$nm' AS name,
-           |    CAST(d$i AS BIGINT) AS docs, CAST(t$i AS BIGINT)
-           |      AS tokens,
-           |    round(CAST(d$i AS DOUBLE) / CAST(d1 AS DOUBLE), 6)
-           |      AS doc_share
-           |  FROM a""".stripMargin
-      }.mkString("\n  UNION ALL\n")
-      s"""WITH @CUM@, a AS (
-         |  SELECT
-         |$aggCols
-         |  FROM cum
-         |)
-         |SELECT * FROM (
-         |$rows
-         |) ORDER BY stage""".stripMargin
-        .replace("@CUM@", funnelCumSql)
-    },
-
-    "q298_wavelet_synopsis" -> {
-      val lvls = (1 to 5).map { j =>
-        val src = if (j == 1) "l0" else s"lv${j - 1}"
-        s"""lv$j AS MATERIALIZED (
-           |  SELECT (t + 1) // 2 AS t, CAST(SUM(x) AS BIGINT) AS x,
-           |    CAST(SUM(CASE WHEN t % 2 = 1 THEN x ELSE -x END)
-           |      AS BIGINT) AS d
-           |  FROM $src GROUP BY 1
-           |)""".stripMargin
-      }.mkString(", ")
-      val dets = (1 to 5).map { j =>
-        s"""  SELECT $j AS lvl, t AS pos, d AS dd,
-           |    CAST(${1L << (5 - j)} AS BIGINT) AS w,
-           |    CAST(${1L << j} AS BIGINT) AS den
-           |  FROM lv$j""".stripMargin
-      }.mkString("\n  UNION ALL\n")
-      s"""WITH $orderGridCtes,
-         |l0 AS (SELECT t, f AS x FROM dense),
-         |$lvls,
-         |details AS (
-         |$dets
-         |), ranked AS MATERIALIZED (
-         |  SELECT lvl, pos, dd, w, den,
-         |    CAST(row_number() OVER (ORDER BY abs(dd) * w DESC,
-         |      lvl, pos) AS BIGINT) AS rk
-         |  FROM details
-         |), dsse AS (
-         |  SELECT round(CAST(coalesce(SUM(dd * dd * w), 0) AS DOUBLE)
-         |    / 32.0, 6) AS dropped_sse
-         |  FROM ranked WHERE rk > 8
-         |), outp AS (
-         |  SELECT CAST(0 AS BIGINT) AS rk, 0 AS lvl,
-         |    CAST(1 AS BIGINT) AS pos,
-         |    round(CAST(x AS DOUBLE) / 32.0, 6) AS coef
-         |  FROM lv5
-         |  UNION ALL
-         |  SELECT rk, lvl, pos,
-         |    round(CAST(dd AS DOUBLE) / CAST(den AS DOUBLE), 6)
-         |  FROM ranked WHERE rk <= 8
-         |)
-         |SELECT rk, lvl, pos, coef, dropped_sse
-         |FROM outp, dsse ORDER BY rk""".stripMargin
-    },
-
-    "q299_hist_selectivity" ->
-      s"""WITH $orderGridCtes, $vOptDpCtes,
-         |gmin AS (SELECT MIN(v) AS gm FROM hist),
-         |bkt AS (
-         |  SELECT bounds.bucket, CAST(ph.p - pl.p AS BIGINT) AS n,
-         |    ghi.gv AS hi,
-         |    CASE WHEN seg_lo = 1 THEN gm - 1 ELSE glo.gv END AS lo
-         |  FROM bounds
-         |  JOIN pre ph ON ph.t = seg_hi
-         |  JOIN pre pl ON pl.t = seg_lo - 1
-         |  JOIN grid ghi ON ghi.t = seg_hi
-         |  LEFT JOIN grid glo ON glo.t = seg_lo - 1, gmin
-         |), thr AS (
-         |  SELECT CAST(floor(CAST(a.gv + b.gv AS DOUBLE) / 2.0)
-         |    AS BIGINT) AS x
-         |  FROM grid a, grid b
-         |  WHERE (a.t = 8 AND b.t = 9) OR (a.t = 16 AND b.t = 17)
-         |    OR (a.t = 24 AND b.t = 25)
-         |), est AS (
-         |  SELECT x, SUM(CAST(round(CAST(n AS DOUBLE)
-         |      * round(greatest(least(CAST(hi - x AS DOUBLE)
-         |          / CAST(hi - lo AS DOUBLE), 1.0), 0.0), 9), 6)
-         |    AS DECIMAL(19,6))) AS est
-         |  FROM bkt, thr GROUP BY 1
-         |), act AS (
-         |  SELECT x, CAST(count(*) AS BIGINT) AS actual
-         |  FROM vals, thr WHERE v > x GROUP BY 1
-         |)
-         |SELECT est.x, round(CAST(est AS DOUBLE), 6) AS est, actual,
-         |  round((CAST(est AS DOUBLE) - CAST(actual AS DOUBLE))
-         |    / CAST(actual AS DOUBLE), 6) AS rel_err
-         |FROM est JOIN act USING (x) ORDER BY x""".stripMargin,
-
-    "q296_merkle_antientropy" -> {
-      def lvlCte(src: String, out: String, rekey: Boolean): String = {
-        val key = if (rekey) "b // 16" else "b"
-        s"""$out AS MATERIALIZED (
-           |  SELECT $key AS b,
-           |    md5(array_to_string(list_sort(list(h)), '')) AS h
-           |  FROM $src GROUP BY 1
-           |)""".stripMargin
-      }
-      def diffSql(a: String, b: String, key: String, lvl: Int): String =
-        s"""  SELECT CAST($lvl AS INTEGER) AS level,
-           |    CAST(count(*) AS BIGINT) AS n_nodes,
-           |    CAST(SUM(CASE WHEN x.h <> y.h THEN 1 ELSE 0 END)
-           |      AS BIGINT) AS n_diff
-           |  FROM $a x JOIN $b y ON x.$key = y.$key""".stripMargin
-      s"""WITH ed AS (
-         |  SELECT doc_id,
-         |    CASE WHEN substr(md5('edit|' || CAST(doc_id AS VARCHAR)),
-         |        1, 1) < '2'
-         |      THEN text || ' EDITED' ELSE text END AS text
-         |  FROM documents
-         |), ra AS MATERIALIZED (
-         |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || '|' || text)
-         |    AS h, doc_id // 64 AS b
-         |  FROM documents
-         |), rb AS MATERIALIZED (
-         |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || '|' || text)
-         |    AS h, doc_id // 64 AS b
-         |  FROM ed
-         |), ${lvlCte("ra", "la1", rekey = false)},
-         |${lvlCte("rb", "lb1", rekey = false)},
-         |${lvlCte("la1", "la2", rekey = true)},
-         |${lvlCte("lb1", "lb2", rekey = true)},
-         |${lvlCte("la2", "la3", rekey = true)},
-         |${lvlCte("lb2", "lb3", rekey = true)}
-         |${diffSql("ra", "rb", "doc_id", 0)}
-         |UNION ALL
-         |${diffSql("la1", "lb1", "b", 1)}
-         |UNION ALL
-         |${diffSql("la2", "lb2", "b", 2)}
-         |UNION ALL
-         |${diffSql("la3", "lb3", "b", 3)}
-         |ORDER BY level""".stripMargin
-    },
-
-    "q291_cf_eval" ->
-      """WITH ranked AS (
-        |  SELECT o_custkey AS cust, o_orderkey AS ok,
-        |    CAST(row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_orderdate DESC, o_orderkey DESC) AS BIGINT)
-        |      AS ork,
-        |    CAST(count(*) OVER (PARTITION BY o_custkey) AS BIGINT)
-        |      AS n_orders
-        |  FROM orders
-        |), mult AS (SELECT * FROM ranked WHERE n_orders >= 2),
-        |items AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-        |  FROM lineitem
-        |), trainb AS MATERIALIZED (
-        |  SELECT cust, ok, pk FROM mult JOIN items USING (ok)
-        |  WHERE ork > 1
-        |), testi AS (
-        |  SELECT DISTINCT cust, pk FROM mult JOIN items USING (ok)
-        |  WHERE ork = 1
-        |), baskets AS (SELECT DISTINCT ok, pk FROM trainb),
-        |ni AS (
-        |  SELECT pk, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM baskets GROUP BY 1
-        |), pairs AS (
-        |  SELECT a.pk, b.pk2, CAST(count(*) AS BIGINT) AS co
-        |  FROM baskets a
-        |  JOIN (SELECT ok, pk AS pk2 FROM baskets) b USING (ok)
-        |  WHERE a.pk < b.pk2
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), sym AS (
-        |  SELECT pk AS a, pk2 AS b, co FROM pairs
-        |  UNION ALL SELECT pk2 AS a, pk AS b, co FROM pairs
-        |), nbrs AS MATERIALIZED (
-        |  SELECT a, b, cs FROM (
-        |    SELECT a, b, cs, row_number() OVER (PARTITION BY a
-        |      ORDER BY cs DESC, b) AS nrk
-        |    FROM (
-        |      SELECT a, b, round(CAST(co AS DOUBLE)
-        |        / sqrt(CAST(na.cnt AS DOUBLE) * CAST(nb.cnt AS DOUBLE)),
-        |        9) AS cs
-        |      FROM sym JOIN ni na ON na.pk = a JOIN ni nb ON nb.pk = b))
-        |  WHERE nrk <= 5
-        |), prof AS MATERIALIZED (SELECT DISTINCT cust, pk FROM trainb),
-        |scores AS (
-        |  SELECT cust, b AS rec, SUM(CAST(cs AS DECIMAL(19,9)))
-        |    AS score
-        |  FROM prof JOIN nbrs ON prof.pk = nbrs.a
-        |  GROUP BY 1, 2
-        |), cand AS (
-        |  SELECT s.cust, s.rec, s.score FROM scores s
-        |  LEFT JOIN prof p ON s.cust = p.cust AND s.rec = p.pk
-        |  WHERE p.pk IS NULL
-        |), top AS (
-        |  SELECT cust, rec FROM (
-        |    SELECT cust, rec, row_number() OVER (PARTITION BY cust
-        |      ORDER BY score DESC, rec) AS rrk FROM cand)
-        |  WHERE rrk <= 10
-        |), hits AS (
-        |  SELECT t.cust,
-        |    CAST(SUM(CASE WHEN ti.pk IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_hits
-        |  FROM top t LEFT JOIN testi ti
-        |    ON t.cust = ti.cust AND t.rec = ti.pk
-        |  GROUP BY 1
-        |)
-        |SELECT CAST(count(*) AS BIGINT) AS users_eval,
-        |  CAST(SUM(CASE WHEN n_hits > 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS users_hit,
-        |  round(CAST(SUM(CASE WHEN n_hits > 0 THEN 1 ELSE 0 END)
-        |      AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS hit_rate,
-        |  round(CAST(SUM(n_hits) AS DOUBLE) / CAST(count(*) AS DOUBLE),
-        |    6) AS mean_hits
-        |FROM hits""".stripMargin,
-
-    "q292_index_bits" ->
-      s"""WITH post AS MATERIALIZED (
-         |  SELECT DISTINCT t AS tk, doc_id
-         |  FROM (SELECT doc_id, unnest($toksSql) AS t FROM documents)
-         |), gaps AS (
-         |  SELECT tk,
-         |    coalesce(doc_id - lag(doc_id) OVER (PARTITION BY tk
-         |      ORDER BY doc_id), doc_id + 1) AS gap,
-         |    CAST(count(*) OVER (PARTITION BY tk) AS BIGINT) AS df
-         |  FROM post
-         |), bits AS (
-         |  SELECT CASE WHEN df <= 1 THEN 'df=1'
-         |      WHEN df <= 10 THEN 'df=2-10'
-         |      WHEN df <= 100 THEN 'df=11-100'
-         |      ELSE 'df>100' END AS df_bucket,
-         |    tk,
-         |    CAST(length(printf('%b', gap)) AS BIGINT) AS lb,
-         |    CAST(length(printf('%b',
-         |      CAST(length(printf('%b', gap)) AS BIGINT))) AS BIGINT)
-         |      AS lbl
-         |  FROM gaps
-         |)
-         |SELECT df_bucket,
-         |  CAST(COUNT(DISTINCT tk) AS BIGINT) AS n_terms,
-         |  CAST(count(*) AS BIGINT) AS n_postings,
-         |  CAST(SUM(lb * 2 - 1) AS BIGINT) AS gamma_bits,
-         |  CAST(SUM(lb + lbl * 2 - 2) AS BIGINT) AS delta_bits,
-         |  round(CAST(SUM(lb * 2 - 1) AS DOUBLE)
-         |    / CAST(count(*) * 32 AS DOUBLE), 6) AS gamma_vs_fixed32
-         |FROM bits GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q294_dedup_agreement" ->
-      // the shell strips its margins BEFORE the three ranker SQLs
-      // substitute in: an interpolated query may itself contain a line
-      // starting with '||' (string concat) that stripMargin would eat
-      """WITH mh AS MATERIALIZED (
-        |  SELECT a_id AS a, b_id AS b FROM (@MH@)
-        |), sh AS MATERIALIZED (
-        |  SELECT a_id AS a, b_id AS b FROM (@SH@)
-        |), wn AS MATERIALIZED (
-        |  SELECT doc_a AS a, doc_b AS b FROM (@WN@)
-        |), u AS (
-         |  SELECT a, b, CAST(1 AS BIGINT) AS bit FROM mh
-         |  UNION ALL SELECT a, b, CAST(2 AS BIGINT) AS bit FROM sh
-         |  UNION ALL SELECT a, b, CAST(4 AS BIGINT) AS bit FROM wn
-         |), mk AS (
-         |  SELECT a, b, CAST(SUM(bit) AS BIGINT) AS mask
-         |  FROM u GROUP BY 1, 2
-         |)
-         |SELECT mask, (mask & 1) > 0 AS in_minhash,
-         |  (mask & 2) > 0 AS in_simhash,
-         |  (mask & 4) > 0 AS in_winnowing,
-         |  CAST(count(*) AS BIGINT) AS n_pairs
-         |FROM mk GROUP BY 1 ORDER BY 1""".stripMargin
-        .replace("@MH@", minhashPairsSql)
-        .replace("@SH@", simhashPairsSql)
-        .replace("@WN@", winnowingPairsSql),
-
-    "q293_cluster_stability" -> {
-      // two full label-prop chains (the q154/q226 replay) on
-      // md5-disjoint edge halves, then exact-integer ARI algebra
-      def chain(sfx: String, cond: String): String = {
-        val sb = new StringBuilder
-        sb ++= s"""e$sfx AS MATERIALIZED (
-           |  SELECT a.l_partkey AS u, b.l_partkey AS v
-           |  FROM lineitem a JOIN lineitem b
-           |    ON a.l_orderkey = b.l_orderkey
-           |    AND a.l_partkey < b.l_partkey
-           |  GROUP BY 1, 2
-           |  HAVING count(*) >= 2 AND $cond
-           |),
-           |sym$sfx AS MATERIALIZED (
-           |  SELECT DISTINCT src, dst FROM (
-           |    SELECT u AS src, v AS dst FROM e$sfx
-           |    UNION ALL SELECT v, u FROM e$sfx)
-           |  WHERE src <> dst
-           |),
-           |l${sfx}0 AS MATERIALIZED (
-           |  SELECT n.node, s.seed, s.seed AS lab
-           |  FROM (SELECT DISTINCT src AS node FROM sym$sfx) n
-           |  LEFT JOIN seeds s USING (node)
-           |)""".stripMargin
-        for (i <- 0 until 3) {
-          sb ++= s""",
-             |c$sfx${i + 1} AS (
-             |  SELECT s.dst AS node, l.lab, count(*) AS c
-             |  FROM sym$sfx s JOIN l$sfx$i l ON s.src = l.node
-             |  WHERE l.lab IS NOT NULL GROUP BY 1, 2
-             |),
-             |w$sfx${i + 1} AS (
-             |  SELECT node, lab FROM (
-             |    SELECT node, lab, row_number() OVER (
-             |      PARTITION BY node ORDER BY c DESC, lab) AS rk
-             |    FROM c$sfx${i + 1})
-             |  WHERE rk = 1
-             |),
-             |l$sfx${i + 1} AS MATERIALIZED (
-             |  SELECT l.node, l.seed,
-             |    CASE WHEN l.seed IS NOT NULL THEN l.seed
-             |         ELSE coalesce(w.lab, l.lab) END AS lab
-             |  FROM l$sfx$i l LEFT JOIN w$sfx${i + 1} w USING (node)
-             |)""".stripMargin
-        }
-        sb.toString
-      }
-      def cond(op: String) =
-        s"substr(md5('ari|' || CAST(u AS VARCHAR) || '|' || " +
-          s"CAST(v AS VARCHAR)), 1, 1) $op '8'"
-      val e = s"""CAST(ta AS DOUBLE) * CAST(tb AS DOUBLE)
-         |      / CAST(n * (n - 1) AS DOUBLE)""".stripMargin
-      s"""WITH seeds AS (
-         |  SELECT p_partkey AS node, p_brand AS seed FROM part
-         |  WHERE p_partkey % 5 = 0
-         |), ${chain("a", cond("<"))}, ${chain("b", cond(">="))},
-         |bth AS (
-         |  SELECT a.node, a.lab AS la, b.lab AS lb
-         |  FROM la3 a JOIN lb3 b USING (node)
-         |  WHERE a.lab IS NOT NULL AND b.lab IS NOT NULL
-         |), ct AS MATERIALIZED (
-         |  SELECT la, lb, CAST(count(*) AS BIGINT) AS nij
-         |  FROM bth GROUP BY 1, 2
-         |), sij AS (
-         |  SELECT CAST(SUM(nij * (nij - 1)) AS BIGINT) AS tij,
-         |    CAST(SUM(nij) AS BIGINT) AS n FROM ct
-         |), sca AS (
-         |  SELECT CAST(SUM(ai * (ai - 1)) AS BIGINT) AS ta,
-         |    CAST(count(*) AS BIGINT) AS ka
-         |  FROM (SELECT la, CAST(SUM(nij) AS BIGINT) AS ai
-         |        FROM ct GROUP BY 1)
-         |), scb AS (
-         |  SELECT CAST(SUM(bj * (bj - 1)) AS BIGINT) AS tb,
-         |    CAST(count(*) AS BIGINT) AS kb
-         |  FROM (SELECT lb, CAST(SUM(nij) AS BIGINT) AS bj
-         |        FROM ct GROUP BY 1)
-         |)
-         |SELECT n AS n_common, ka AS clusters_a, kb AS clusters_b,
-         |  CASE WHEN (CAST(ta AS DOUBLE) + CAST(tb AS DOUBLE)) / 2.0
-         |      - $e = 0.0 THEN 1.0
-         |    ELSE round((CAST(tij AS DOUBLE) - $e)
-         |      / ((CAST(ta AS DOUBLE) + CAST(tb AS DOUBLE)) / 2.0
-         |        - $e), 6) END AS ari
-         |FROM sij, sca, scb""".stripMargin
-    },
-
-    "q287_mink_membership" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, $toksSql AS tk FROM documents
-         |), bi AS (
-         |  SELECT doc_id, tk[CAST(i + 1 AS INT)] AS w1,
-         |    tk[CAST(i + 2 AS INT)] AS w2
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(range(0, greatest(len(tk) - 1, 0))) AS i
-         |        FROM base)
-         |), tf AS (
-         |  SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS tf
-         |  FROM bi GROUP BY 1, 2, 3
-         |), c2 AS (SELECT w1, w2, SUM(tf) AS c2 FROM tf GROUP BY 1, 2),
-         |c1 AS (SELECT w1, SUM(tf) AS c1 FROM tf GROUP BY 1),
-         |v AS (
-         |  SELECT CAST(COUNT(DISTINCT t) AS DOUBLE) AS vs
-         |  FROM (SELECT unnest(tk) AS t FROM base)
-         |), sc AS (
-         |  SELECT doc_id, w1, w2,
-         |    round(ln((CAST(c2 AS DOUBLE) + 0.5)
-         |      / (CAST(c1 AS DOUBLE) + 0.5 * vs)), 9) AS lp
-         |  FROM tf JOIN c2 USING (w1, w2) JOIN c1 USING (w1), v
-         |), rkd AS (
-         |  SELECT doc_id, lp,
-         |    CAST(row_number() OVER (PARTITION BY doc_id
-         |      ORDER BY lp, w1, w2) AS BIGINT) AS rk,
-         |    CAST(count(*) OVER (PARTITION BY doc_id) AS BIGINT)
-         |      AS n_types
-         |  FROM sc
-         |), agg AS (
-         |  SELECT doc_id, n_types, (n_types + 4) // 5 AS k_used,
-         |    round(-CAST(SUM(CASE WHEN rk <= (n_types + 4) // 5
-         |        THEN CAST(lp AS DECIMAL(19,9))
-         |        ELSE CAST(0.0 AS DECIMAL(19,9)) END) AS DOUBLE)
-         |      / CAST((n_types + 4) // 5 AS DOUBLE), 6)
-         |      AS mink_surprisal,
-         |    round(-CAST(SUM(CAST(lp AS DECIMAL(19,9))) AS DOUBLE)
-         |      / CAST(n_types AS DOUBLE), 6) AS mean_surprisal
-         |  FROM rkd GROUP BY 1, 2
-         |)
-         |SELECT d.doc_id, COALESCE(n_types, 0) AS n_types,
-         |  COALESCE(k_used, 0) AS k_used,
-         |  COALESCE(mink_surprisal, 0.0) AS mink_surprisal,
-         |  COALESCE(mean_surprisal, 0.0) AS mean_surprisal
-         |FROM documents d LEFT JOIN agg USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    "q289_facility_location" -> {
-      // unrolled 5-round greedy replay: each round re-derives marginal
-      // gains from the checkpointed sim matrix and the coverage vector,
-      // exactly as the Spark loop — all-DECIMAL, so bit-identical
-      val rounds = (1 to 5).map { r =>
-        val bp = s"b${r - 1}"
-        s"""g$r AS (
-           |  SELECT cid, SUM(sim - best) AS g
-           |  FROM m JOIN $bp USING (did)
-           |  WHERE sim > best GROUP BY 1
-           |), p$r AS (
-           |  SELECT cid, g FROM g$r ORDER BY g DESC, cid LIMIT 1
-           |), b$r AS (
-           |  SELECT did,
-           |    greatest(best, coalesce(mp.sim, CAST(0 AS DECIMAL(19,9))))
-           |      AS best
-           |  FROM $bp LEFT JOIN
-           |    (SELECT did, sim FROM m JOIN p$r USING (cid)) mp
-           |    USING (did)
-           |)""".stripMargin
-      }.mkString(", ")
-      val picksSql = (1 to 5).map(r =>
-        s"  SELECT CAST($r AS INTEGER) AS rk, cid AS doc_id, g FROM p$r")
-        .mkString("\n  UNION ALL\n")
-      s"""WITH tk AS (
-         |  SELECT doc_id,
-         |    list_filter(regexp_split_to_array(text, '\\s+'),
-         |      x -> x <> '') AS raw
-         |  FROM documents
-         |), sh0 AS MATERIALIZED (
-         |  SELECT doc_id,
-         |    list_distinct(CASE WHEN len(raw) < 3
-         |      THEN [array_to_string(raw, ' ')]
-         |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-         |            for i in range(0, len(raw) - 2)] END) AS sgs
-         |  FROM tk
-         |), cand AS MATERIALIZED (
-         |  SELECT doc_id AS cid, sgs AS csgs FROM sh0
-         |  ORDER BY md5('fl|' || CAST(doc_id AS VARCHAR)), doc_id
-         |  LIMIT 30
-         |), m AS MATERIALIZED (
-         |  SELECT a.doc_id AS did, cand.cid,
-         |    CAST(round(CAST(len(list_intersect(a.sgs, csgs)) AS DOUBLE)
-         |        / CAST(len(a.sgs) + len(csgs)
-         |          - len(list_intersect(a.sgs, csgs)) AS DOUBLE), 9)
-         |      AS DECIMAL(19,9)) AS sim
-         |  FROM sh0 a, cand
-         |  WHERE len(list_intersect(a.sgs, csgs)) > 0
-         |), b0 AS (
-         |  SELECT DISTINCT did, CAST(0 AS DECIMAL(19,9)) AS best FROM m
-         |), $rounds,
-         |picks AS (
-         |$picksSql
-         |)
-         |SELECT rk, doc_id, round(CAST(g AS DOUBLE), 6) AS gain,
-         |  round(CAST(SUM(g) OVER (ORDER BY rk
-         |    ROWS UNBOUNDED PRECEDING) AS DOUBLE), 6) AS objective
-         |FROM picks ORDER BY rk""".stripMargin
-    }
-  )
-
-  /** DuckDB replay of [[operators.Graph.betweennessSampled]] over the
-    * support>=2 co-purchase graph with the fixed K=16 md5 hash-rank
-    * pivot budget (see [[betweennessPivots]]): unrolled forward layers
-    * (σ as exact BIGINT sums, left-anti visited set) then unrolled
-    * backward dependency layers with the same round(9)-pinned DECIMAL
-    * accumulation. */
-  private def betweennessSql(depth: Int, pivotK: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH e0 AS MATERIALIZED (
-              |  SELECT a.l_partkey AS u, b.l_partkey AS v
-              |  FROM lineitem a JOIN lineitem b
-              |    ON a.l_orderkey = b.l_orderkey
-              |    AND a.l_partkey < b.l_partkey
-              |  GROUP BY 1, 2 HAVING count(*) >= 2
-              |),
-              |sym AS MATERIALIZED (
-              |  SELECT DISTINCT src, dst FROM (
-              |    SELECT u AS src, v AS dst FROM e0
-              |    UNION ALL SELECT v, u FROM e0)
-              |  WHERE src <> dst
-              |),
-              |pivots AS MATERIALIZED (
-              |  SELECT node FROM (SELECT DISTINCT src AS node FROM sym) n
-              |  ORDER BY md5(CAST(node AS VARCHAR)), node LIMIT $pivotK
-              |),
-              |l0 AS MATERIALIZED (
-              |  SELECT node AS seed, node, CAST(1 AS BIGINT) AS sigma
-              |  FROM pivots
-              |),
-              |v0 AS (SELECT seed, node FROM l0)""".stripMargin
-    for (h <- 1 to depth)
-      sb ++= s""",
-               |l$h AS MATERIALIZED (
-               |  SELECT g.seed, g.node, g.sigma FROM (
-               |    SELECT p.seed, e.dst AS node,
-               |      CAST(sum(p.sigma) AS BIGINT) AS sigma
-               |    FROM l${h - 1} p JOIN sym e ON e.src = p.node
-               |    GROUP BY 1, 2) g
-               |  WHERE NOT EXISTS (SELECT 1 FROM v${h - 1} x
-               |    WHERE x.seed = g.seed AND x.node = g.node)
-               |),
-               |v$h AS (SELECT seed, node FROM v${h - 1}
-               |  UNION ALL SELECT seed, node FROM l$h)""".stripMargin
-    sb ++= s""",
-              |b$depth AS (SELECT seed, node, sigma,
-              |  CAST(0.0 AS DOUBLE) AS d FROM l$depth)""".stripMargin
-    for (h <- (depth - 1) to 0 by -1)
-      sb ++= s""",
-               |b$h AS MATERIALIZED (
-               |  SELECT l.seed, l.node, l.sigma,
-               |    round(coalesce(CAST(sum(CAST(round(
-               |      CAST(l.sigma AS DOUBLE) / CAST(c.sw AS DOUBLE)
-               |      * (1.0 + c.dw), 9) AS DECIMAL(29,9))) AS DOUBLE),
-               |      0.0), 9) AS d
-               |  FROM l$h l LEFT JOIN (
-               |    SELECT p.seed, e.dst AS node, p.sigma AS sw,
-               |      p.d AS dw
-               |    FROM b${h + 1} p JOIN sym e ON e.src = p.node) c
-               |    ON c.seed = l.seed AND c.node = l.node
-               |  GROUP BY 1, 2, 3
-               |)""".stripMargin
-    val accs = (0 to depth).map(h => s"SELECT seed, node, d FROM b$h")
-      .mkString("\n    UNION ALL ")
-    sb ++= s"""
-              |SELECT node,
-              |  round(CAST(sum(CAST(round(d, 9) AS DECIMAL(29,9)))
-              |    AS DOUBLE), 6) AS bc
-              |FROM ($accs) WHERE seed <> node
-              |GROUP BY 1
-              |HAVING sum(CAST(round(d, 9) AS DECIMAL(29,9))) > 0
-              |ORDER BY node""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB replay of [[operators.Graph.bfsHops]] over the support>=2
-    * co-purchase graph, seeds = nodes with key % 101 == 0: `rounds`
-    * unrolled min-union rounds (MATERIALIZED — the [[labelPropSql]]
-    * inlining-blowup guard). */
-  /** Direct-path corpus-card SQL (q78) — also the oracle for q210's
-    * incremental/merged computation, which must reproduce it exactly. */
-  private lazy val corpusCardSql: String =
-    s"""WITH base AS (
-       |  SELECT source, lang,
-       |    CAST(len($toksSql) AS BIGINT) AS toks,
-       |    round(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-       |      * (1.0 - CASE WHEN length(text) = 0 THEN 0.0
-       |          ELSE CAST(length(regexp_replace(text,
-       |              '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-       |            / CAST(length(text) AS DOUBLE) END)
-       |      * (0.5 + (CASE WHEN len($toksSql) = 0 THEN 0.0
-       |          ELSE CAST(len(list_filter($toksSql,
-       |              t -> list_contains($stopwordsSql, lower(t))))
-       |              AS DOUBLE)
-       |            / CAST(len($toksSql) AS DOUBLE) END) / 2.0), 6) AS q
-       |  FROM documents
-       |), bysrc AS (
-       |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |    CAST(SUM(toks) AS BIGINT) AS n_tokens,
-       |    round(CAST(SUM(CAST(q AS DECIMAL(38,6))) AS DOUBLE)
-       |      / COUNT(*), 6) AS mean_quality
-       |  FROM base GROUP BY source
-       |), lc AS (
-       |  SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n
-       |  FROM base GROUP BY source, lang
-       |), mx AS (SELECT source, MAX(n) AS mxn FROM lc GROUP BY source),
-       |top AS (
-       |  SELECT l.source, MIN(l.lang) AS top_lang,
-       |    CAST(MAX(l.n) AS BIGINT) AS top_lang_n
-       |  FROM lc l JOIN mx USING (source) WHERE l.n = mxn
-       |  GROUP BY l.source
-       |)
-       |SELECT b.source, b.n_docs, b.n_tokens, b.mean_quality,
-       |  t2.top_lang, t2.top_lang_n
-       |FROM bysrc b JOIN top t2 USING (source)
-       |ORDER BY b.source""".stripMargin
-
-  /** DuckDB replay of the [[operators.NaiveBayes]] training + scoring
-    * chain (labels = the fixture's langs ascending): CTEs `base` →
-    * `pred(actual, predicted)` with train membership given by
-    * `trainPred`. q192 appends the confusion rollup; q203 wraps one
-    * chain per fold. */
-  private def nbChainSql(trainPred: String): String = {
-    val langs = Seq("de", "en", "es", "fr", "zh")
-    val cntCols = langs.zipWithIndex.map { case (l, i) =>
-      s"sum(CASE WHEN actual = '$l' THEN 1 ELSE 0 END) AS c_$i"
-    }.mkString(",\n    ")
-    val sCols = langs.indices.map { i =>
-      s"sum(CAST(round(ln(CAST(c.c_$i + 1 AS DOUBLE)), 9) AS DECIMAL(38,9))) AS s_$i"
-    }.mkString(",\n    ")
-    val scoreCols = langs.zipWithIndex.map { case (l, i) =>
-      s"""round((SELECT lnprior FROM consts WHERE actual = '$l')
-         |      - CAST(len(te.tk) AS DOUBLE)
-         |        * (SELECT lnden FROM consts WHERE actual = '$l')
-         |      + coalesce(CAST(s_$i AS DOUBLE), 0.0), 6) AS score_$i""".stripMargin
-    }.mkString(",\n    ")
-    val predCase = langs.zipWithIndex.init.map { case (l, i) =>
-      s"WHEN score_$i = g THEN '$l'"
-    }.mkString("CASE ", " ", s" ELSE '${langs.last}' END")
-    s"""WITH base AS MATERIALIZED (
-       |  SELECT doc_id, lang AS actual,
-       |    list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |      x -> x <> '') AS tk,
-       |    $trainPred AS is_train
-       |  FROM documents
-       |), tr AS (SELECT * FROM base WHERE is_train
-       |), stats AS MATERIALIZED (
-       |  SELECT actual, CAST(count(*) AS BIGINT) AS n_docs,
-       |    CAST(sum(len(tk)) AS BIGINT) AS n_toks
-       |  FROM tr GROUP BY 1
-       |), cnt AS MATERIALIZED (
-       |  SELECT token,
-       |    $cntCols
-       |  FROM (SELECT actual, unnest(tk) AS token FROM tr)
-       |  GROUP BY 1
-       |), consts AS MATERIALIZED (
-       |  SELECT s.actual,
-       |    round(ln(CAST(s.n_docs AS DOUBLE))
-       |      - ln(CAST(t.n AS DOUBLE)), 9) AS lnprior,
-       |    round(ln(CAST(s.n_toks + v.v AS DOUBLE)), 9) AS lnden
-       |  FROM stats s,
-       |    (SELECT CAST(sum(n_docs) AS BIGINT) AS n FROM stats) t,
-       |    (SELECT count(*) AS v FROM cnt) v
-       |), contrib AS MATERIALIZED (
-       |  SELECT b.doc_id,
-       |    $sCols
-       |  FROM (SELECT doc_id, unnest(tk) AS token
-       |        FROM base WHERE NOT is_train) b
-       |  JOIN cnt c USING (token) GROUP BY 1
-       |), scored AS (
-       |  SELECT te.actual,
-       |    $scoreCols
-       |  FROM (SELECT * FROM base WHERE NOT is_train) te
-       |  LEFT JOIN contrib ON contrib.doc_id = te.doc_id
-       |), pred AS (
-       |  SELECT actual, $predCase AS predicted
-       |  FROM (SELECT *, greatest(${langs.indices
-                .map(i => s"score_$i").mkString(", ")}) AS g
-       |        FROM scored)
-       |)""".stripMargin
-  }
-
-  /** DuckDB replay of [[operators.Graph.weightedShortestPaths]] over the
-    * support>=2 co-purchase graph with cost = 1000000 // support, seeds
-    * = nodes with key % 101 == 0: unrolled min-plus relaxation rounds
-    * (all BIGINT arithmetic). */
-  private def wspSql(rounds: Int): String = {
-    val sb = new StringBuilder
-    sb ++= """WITH e0 AS MATERIALIZED (
-             |  SELECT a.l_partkey AS u, b.l_partkey AS v,
-             |    1000000 // count(*) AS cost
-             |  FROM lineitem a JOIN lineitem b
-             |    ON a.l_orderkey = b.l_orderkey
-             |    AND a.l_partkey < b.l_partkey
-             |  GROUP BY 1, 2 HAVING count(*) >= 2
-             |),
-             |sym AS MATERIALIZED (
-             |  SELECT src, dst, CAST(min(cost) AS BIGINT) AS cost FROM (
-             |    SELECT u AS src, v AS dst, cost FROM e0
-             |    UNION ALL SELECT v, u, cost FROM e0)
-             |  GROUP BY 1, 2
-             |),
-             |d0 AS MATERIALIZED (
-             |  SELECT DISTINCT src AS node, CAST(0 AS BIGINT) AS cost
-             |  FROM sym WHERE src % 101 = 0
-             |)""".stripMargin
-    for (i <- 1 to rounds)
-      sb ++= s""",
-               |d$i AS MATERIALIZED (
-               |  SELECT node, min(cost) AS cost FROM (
-               |    SELECT node, cost FROM d${i - 1}
-               |    UNION ALL
-               |    SELECT s.dst AS node, d.cost + s.cost AS cost
-               |    FROM sym s JOIN d${i - 1} d ON s.src = d.node)
-               |  GROUP BY 1
-               |)""".stripMargin
-    sb ++= s"""
-              |SELECT node, cost
-              |FROM d$rounds ORDER BY node""".stripMargin
-    sb.toString
-  }
-
-  private def bfsSql(rounds: Int): String = {
-    val sb = new StringBuilder
-    sb ++= """WITH e0 AS MATERIALIZED (
-             |  SELECT a.l_partkey AS u, b.l_partkey AS v
-             |  FROM lineitem a JOIN lineitem b
-             |    ON a.l_orderkey = b.l_orderkey
-             |    AND a.l_partkey < b.l_partkey
-             |  GROUP BY 1, 2 HAVING count(*) >= 2
-             |),
-             |sym AS MATERIALIZED (
-             |  SELECT DISTINCT src, dst FROM (
-             |    SELECT u AS src, v AS dst FROM e0
-             |    UNION ALL SELECT v, u FROM e0)
-             |),
-             |d0 AS MATERIALIZED (
-             |  SELECT DISTINCT src AS node, 0 AS hops
-             |  FROM sym WHERE src % 101 = 0
-             |)""".stripMargin
-    for (i <- 1 to rounds)
-      sb ++= s""",
-               |d$i AS MATERIALIZED (
-               |  SELECT node, min(hops) AS hops FROM (
-               |    SELECT node, hops FROM d${i - 1}
-               |    UNION ALL
-               |    SELECT s.dst AS node, d.hops + 1 AS hops
-               |    FROM sym s JOIN d${i - 1} d ON s.src = d.node)
-               |  GROUP BY 1
-               |)""".stripMargin
-    sb ++= s"""
-              |SELECT node, CAST(hops AS INT) AS hops
-              |FROM d$rounds ORDER BY node""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB replay of [[operators.Graph.labelPropagation]] over the
-    * support>=2 co-purchase graph with 20%-of-parts brand seeds:
-    * `rounds` unrolled majority-vote rounds (MATERIALIZED — the same
-    * inlining-blowup guard as [[kcoreSql]]). */
-  private def labelPropBodySql(rounds: Int): String = {
-    val sb = new StringBuilder
-    sb ++= """WITH e0 AS MATERIALIZED (
-             |  SELECT a.l_partkey AS u, b.l_partkey AS v
-             |  FROM lineitem a JOIN lineitem b
-             |    ON a.l_orderkey = b.l_orderkey
-             |    AND a.l_partkey < b.l_partkey
-             |  GROUP BY 1, 2 HAVING count(*) >= 2
-             |),
-             |sym AS MATERIALIZED (
-             |  SELECT DISTINCT src, dst FROM (
-             |    SELECT u AS src, v AS dst FROM e0
-             |    UNION ALL SELECT v, u FROM e0)
-             |  WHERE src <> dst
-             |),
-             |seeds AS (
-             |  SELECT p_partkey AS node, p_brand AS seed FROM part
-             |  WHERE p_partkey % 5 = 0
-             |),
-             |l0 AS MATERIALIZED (
-             |  SELECT n.node, s.seed, s.seed AS lab
-             |  FROM (SELECT DISTINCT src AS node FROM sym) n
-             |  LEFT JOIN seeds s USING (node)
-             |)""".stripMargin
-    for (i <- 0 until rounds) {
-      sb ++= s""",
-                |c${i + 1} AS (
-                |  SELECT s.dst AS node, l.lab, count(*) AS c
-                |  FROM sym s JOIN l$i l ON s.src = l.node
-                |  WHERE l.lab IS NOT NULL GROUP BY 1, 2
-                |),
-                |w${i + 1} AS (
-                |  SELECT node, lab FROM (
-                |    SELECT node, lab, row_number() OVER (
-                |      PARTITION BY node ORDER BY c DESC, lab) AS rk
-                |    FROM c${i + 1})
-                |  WHERE rk = 1
-                |),
-                |l${i + 1} AS MATERIALIZED (
-                |  SELECT l.node, l.seed,
-                |    CASE WHEN l.seed IS NOT NULL THEN l.seed
-                |         ELSE coalesce(w.lab, l.lab) END AS lab
-                |  FROM l$i l LEFT JOIN w${i + 1} w USING (node)
-                |)""".stripMargin
-    }
-    sb.toString
-  }
-
-  private def labelPropSql(rounds: Int): String =
-    labelPropBodySql(rounds) + s"""
-       |SELECT node, lab AS label FROM l$rounds
-       |WHERE lab IS NOT NULL ORDER BY node""".stripMargin
-
-  /** DuckDB replay of [[operators.Graph.kCore]] over the support>=2
-    * co-purchase part graph: `rounds` unrolled peel rounds (degree CTE,
-    * keep-set, two keyed semi-joins), exactly the operator's sequence. */
-  private def kcoreSql(k: Int, rounds: Int): String = {
-    // AS MATERIALIZED: each CTE is referenced several times per round;
-    // inlining would re-expand the whole prefix per reference
-    // (exponential in `rounds`)
-    val sb = new StringBuilder
-    sb ++= """WITH e0 AS MATERIALIZED (
-             |  SELECT a.l_partkey AS u, b.l_partkey AS v
-             |  FROM lineitem a JOIN lineitem b
-             |    ON a.l_orderkey = b.l_orderkey
-             |    AND a.l_partkey < b.l_partkey
-             |  GROUP BY 1, 2 HAVING count(*) >= 2
-             |)""".stripMargin
-    for (i <- 0 until rounds) {
-      sb ++= s""",
-                |d$i AS (
-                |  SELECT n, count(*) AS d
-                |  FROM (SELECT u AS n FROM e$i UNION ALL
-                |        SELECT v AS n FROM e$i)
-                |  GROUP BY 1
-                |),
-                |k$i AS MATERIALIZED (SELECT n FROM d$i WHERE d >= $k),
-                |e${i + 1} AS MATERIALIZED (
-                |  SELECT u, v FROM e$i
-                |  JOIN k$i ku ON e$i.u = ku.n
-                |  JOIN k$i kv ON e$i.v = kv.n
-                |)""".stripMargin
-    }
-    sb ++= s"""
-              |SELECT node, CAST(count(*) AS BIGINT) AS core_deg
-              |FROM (SELECT u AS node FROM e$rounds UNION ALL
-              |      SELECT v AS node FROM e$rounds)
-              |GROUP BY 1 ORDER BY node""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB BM25 (Lucene k1=1.2/b=0.75 formulation) over `documents` for a
-    * literal term list — the exact algebra of [[operators.Retrieval.bm25]]
-    * (same op order; ln ulps absorbed by round(6)). */
-  /** Shared keep-best dedup CTE chain ending in `lab` (doc_id,
-    * cluster_id, q) and `best` (cluster_id, n_members, best_q) —
-    * the exact q75 replay (all-pairs Jaccard >= 0.5 ground truth,
-    * transitive closure, quality argmax); q75 selects the kept row
-    * per cluster, q312 re-plans the token recipe over the kept
-    * corpus. */
-  private lazy val keepBestLabSql: String =
-    s"""WITH RECURSIVE tk AS (
-         |  SELECT doc_id,
-         |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')
-         |      AS raw
-         |  FROM documents
-         |), sh AS (
-         |  SELECT doc_id,
-         |    list_distinct(CASE WHEN len(raw) < 3
-         |      THEN [array_to_string(raw, ' ')]
-         |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-         |            for i in range(0, len(raw) - 2)] END) AS shingles
-         |  FROM tk
-         |), prs AS (
-         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-         |      / CAST(len(list_distinct(list_concat(a.shingles, b.shingles)))
-         |          AS DOUBLE) >= 0.5
-         |), edges AS (
-         |  SELECT a_id AS s, b_id AS d FROM prs
-         |  UNION SELECT b_id, a_id FROM prs
-         |), reach(s, d) AS (
-         |  SELECT s, d FROM edges
-         |  UNION
-         |  SELECT r.s, e.d FROM reach r JOIN edges e ON e.s = r.d
-         |), clu AS (
-         |  SELECT s AS doc_id, least(s, min(d)) AS cl
-         |  FROM reach GROUP BY s
-         |), qual AS (
-         |  SELECT d.doc_id, round(
-         |    least(CAST(length(d.text) AS DOUBLE) / 500.0, 1.0)
-         |    * (1.0 - CASE WHEN length(d.text) = 0 THEN 0.0
-         |        ELSE CAST(length(regexp_replace(d.text,
-         |            '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-         |          / CAST(length(d.text) AS DOUBLE) END)
-         |    * (0.5 + (CASE WHEN len(t.raw) = 0 THEN 0.0
-         |        ELSE CAST(len(list_filter(t.raw,
-         |            t2 -> list_contains($stopwordsSql, lower(t2)))) AS DOUBLE)
-         |          / CAST(len(t.raw) AS DOUBLE) END) / 2.0), 6) AS q
-         |  FROM documents d JOIN tk t USING (doc_id)
-         |), lab AS (
-         |  SELECT d.doc_id, COALESCE(c.cl, d.doc_id) AS cluster_id, qu.q
-         |  FROM documents d LEFT JOIN clu c USING (doc_id)
-         |  JOIN qual qu USING (doc_id)
-         |), best AS (
-         |  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members,
-         |    MAX(q) AS best_q
-         |  FROM lab GROUP BY cluster_id
-         |)""".stripMargin
-
-  /** Shared md5-MinHash banded-pair CTE chain ending in `verified`
-    * (a_id, b_id, sim) — the exact replay of minhashLshPairs(fast=false)
-    * BEFORE any threshold filter; q37 selects at 0.5, q310 sweeps a
-    * threshold grid over the same stream, q320 runs it over a
-    * normalized relation instead of the raw table. */
-  private lazy val minhashVerifiedCte: String =
-    minhashVerifiedCteFrom("documents")
-
-  /** [[minhashVerifiedCte]] parameterized on the (doc_id, text) source
-    * relation. */
-  private def minhashVerifiedCteFrom(rel: String): String =
-    s"""WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS raw
-        |  FROM $rel
-        |), sh AS (
-        |  SELECT doc_id, raw,
-        |    CASE WHEN len(raw) < 3 THEN [array_to_string(raw, ' ')]
-        |      ELSE [array_to_string(raw[i+1:i+3], ' ')
-        |            for i in range(0, len(raw) - 2)] END AS shingles
-        |  FROM tk
-        |), sig AS (
-        |  SELECT doc_id, raw, shingles,
-        |    [list_min([md5(CAST(i AS VARCHAR) || '|' || s) for s in shingles])
-        |     for i in range(0, 16)] AS mh
-        |  FROM sh
-        |), banded AS (
-        |  SELECT doc_id, raw, shingles,
-        |    unnest([CAST(b AS VARCHAR) || '_'
-        |            || array_to_string(mh[b*4+1:b*4+4], '|')
-        |            for b in range(0, 4)]) AS bandkey
-        |  FROM sig
-        |), pairs AS (
-        |  SELECT DISTINCT l.doc_id AS a_id, r.doc_id AS b_id,
-        |    l.shingles AS a_sh, r.shingles AS b_sh
-        |  FROM banded l JOIN banded r ON l.bandkey = r.bandkey
-        |  WHERE l.doc_id < r.doc_id
-        |), verified AS (
-        |  SELECT a_id, b_id,
-        |    round(CASE WHEN len(list_distinct(list_concat(a_sh, b_sh))) = 0
-        |      THEN 0.0
-        |      ELSE CAST(len(list_intersect(list_distinct(a_sh),
-        |            list_distinct(b_sh))) AS DOUBLE)
-        |        / CAST(len(list_distinct(list_concat(a_sh, b_sh))) AS DOUBLE)
-        |      END, 6) AS sim
-        |  FROM pairs)""".stripMargin
-
-  private lazy val minhashPairsSql: String =
-    minhashVerifiedCte +
-      """
-        |SELECT a_id, b_id, sim FROM verified WHERE sim >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin
-
-  private lazy val dedupSweepSql: String =
-    minhashVerifiedCte +
-      """, thr AS (
-        |  SELECT CAST(unnest([0.3, 0.4, 0.5, 0.6, 0.7, 0.8]) AS DOUBLE)
-        |    AS theta
-        |), hit AS (
-        |  SELECT thr.theta, v.a_id, v.b_id, v.sim
-        |  FROM verified v JOIN thr ON v.sim >= thr.theta
-        |), perpair AS (
-        |  SELECT theta, COUNT(*) AS n_pairs,
-        |    round(CAST(SUM(CAST(sim AS DECIMAL(38,6))) AS DOUBLE)
-        |      / COUNT(*), 6) AS mean_sim
-        |  FROM hit GROUP BY theta
-        |), perdoc AS (
-        |  SELECT theta, COUNT(DISTINCT d) AS n_docs
-        |  FROM (SELECT theta, unnest([a_id, b_id]) AS d FROM hit)
-        |  GROUP BY theta)
-        |SELECT thr.theta,
-        |  CAST(COALESCE(perpair.n_pairs, 0) AS BIGINT) AS n_pairs,
-        |  CAST(COALESCE(perdoc.n_docs, 0) AS BIGINT) AS n_docs,
-        |  perpair.mean_sim
-        |FROM thr LEFT JOIN perpair USING (theta)
-        |LEFT JOIN perdoc USING (theta)
-        |ORDER BY theta""".stripMargin
-
-  private lazy val simhashPairsSql: String =
-    """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_transform(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> x <> ''), t -> md5(t)) AS hashes
-        |  FROM documents
-        |), sig AS (
-        |  SELECT doc_id,
-        |  array_to_string([
-        |    substr('0123456789abcdef', 1 + list_sum([
-        |      CASE WHEN list_sum([
-        |        CASE WHEN ((strpos('0123456789abcdef',
-        |            substr(h, jj + 1, 1)) - 1) >> b) & 1 = 1
-        |          THEN 1 ELSE -1 END
-        |        for h in hashes]) > 0 THEN (1 << b) ELSE 0 END
-        |      for b in range(0, 4)])::INT, 1)
-        |    for jj in range(0, 16)], '') AS simhash
-        |  FROM tk
-        |), pairs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    CAST(list_sum([bit_count(xor(
-        |      strpos('0123456789abcdef', substr(a.simhash, i + 1, 1)) - 1,
-        |      strpos('0123456789abcdef', substr(b.simhash, i + 1, 1)) - 1))
-        |      for i in range(0, 16)]) AS BIGINT) AS hamming
-        |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        |)
-        |SELECT a_id, b_id, hamming FROM pairs WHERE hamming <= 3
-        |ORDER BY a_id, b_id""".stripMargin
-
-  private lazy val winnowingPairsSql: String =
-    """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
-        |      AS raw
-        |  FROM documents
-        |), hsl AS (
-        |  SELECT doc_id, CASE WHEN len(raw) < 4
-        |    THEN [substr(md5(array_to_string(raw, ' ')), 1, 8)]
-        |    ELSE [substr(md5(array_to_string(raw[j+1:j+4], ' ')), 1, 8)
-        |          for j in range(0, len(raw) - 3)] END AS hs
-        |  FROM tk
-        |), ex AS (
-        |  SELECT doc_id, unnest(range(0, len(hs))) AS j, len(hs) AS m,
-        |    hs
-        |  FROM hsl
-        |), ex2 AS (
-        |  SELECT doc_id, j, m, hs[CAST(j + 1 AS INT)] AS h FROM ex
-        |), wm AS (
-        |  SELECT doc_id, j AS i, m,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY j
-        |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin
-        |  FROM ex2
-        |), starts AS (SELECT * FROM wm WHERE i <= greatest(m - 4, 0)
-        |), sel AS (
-        |  SELECT s.doc_id, s.i, max(e.j) AS p
-        |  FROM starts s JOIN ex2 e ON e.doc_id = s.doc_id
-        |    AND e.j >= s.i AND e.j <= s.i + 3 AND e.h = s.wmin
-        |  GROUP BY 1, 2
-        |), fpd AS (
-        |  SELECT DISTINCT e.doc_id, e.h
-        |  FROM (SELECT DISTINCT doc_id, p FROM sel) q
-        |  JOIN ex2 e ON e.doc_id = q.doc_id AND e.j = q.p
-        |), keep AS (SELECT h FROM fpd GROUP BY h HAVING count(*) <= 100
-        |), f2 AS (SELECT doc_id, h FROM fpd JOIN keep USING (h)
-        |), nf AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM f2 GROUP BY 1
-        |), pr AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(count(*) AS BIGINT) AS n_shared
-        |  FROM f2 a JOIN f2 b ON a.h = b.h AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |)
-        |SELECT doc_a, doc_b, n_shared, na.n AS n_a, nb.n AS n_b,
-        |  round(CAST(n_shared AS DOUBLE)
-        |    / CAST(least(na.n, nb.n) AS DOUBLE), 6) AS containment
-        |FROM pr JOIN nf na ON na.doc_id = pr.doc_a
-        |JOIN nf nb ON nb.doc_id = pr.doc_b
-        |ORDER BY doc_a, doc_b""".stripMargin
-
-  /** Shared q300/q303 oracle prefix: the funnel survivorship chain
-    * flags0..cum (c1..c7 per doc), with the q37/q68/q32/q31 replays
-    * substituted in. Usable as the head of a WITH clause. */
-  private lazy val funnelCumSql: String = {
-    val conds = Seq(
-      "TRUE",
-      "f_gates",
-      "f_gates AND f.doc_id = keep",
-      "f_gates AND f.doc_id = keep AND b_id IS NULL",
-      "f_gates AND f.doc_id = keep AND b_id IS NULL" +
-        " AND f.doc_id >= 10 AND coalesce(n_overlap, 0) = 0",
-      "f_gates AND f.doc_id = keep AND b_id IS NULL" +
-        " AND f.doc_id >= 10 AND coalesce(n_overlap, 0) = 0" +
-        " AND lang_pred = 'en'",
-      "f_gates AND f.doc_id = keep AND b_id IS NULL" +
-        " AND f.doc_id >= 10 AND coalesce(n_overlap, 0) = 0" +
-        " AND lang_pred = 'en' AND quality >= 0.3")
-    val cumCols = conds.zipWithIndex
-      .map { case (c, i) => s"    $c AS c${i + 1}" }.mkString(",\n")
-    s"""flags0 AS (
-       |  SELECT doc_id,
-       |    length(text) >= 200
-       |      AND (CASE WHEN length(text) > 0
-       |        THEN length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-       |            * 10
-       |          >= length(text) * 6
-       |        ELSE false END)
-       |      AND len($toksSql) >= 30 AS f_gates,
-       |    CAST(len($toksSql) AS BIGINT) AS ntk,
-       |    md5(text) AS k
-       |  FROM documents
-       |), wk AS (
-       |  SELECT md5(text) AS k, MIN(doc_id) AS keep
-       |  FROM documents GROUP BY 1
-       |), nd AS (SELECT DISTINCT b_id FROM (@MH@)),
-       |dc AS (SELECT doc_id, n_overlap FROM (@DECON@)),
-       |lg AS (SELECT doc_id, lang_pred FROM (@LANG@)),
-       |qs AS (SELECT doc_id, quality FROM (@QUAL@)),
-       |cum AS MATERIALIZED (
-       |  SELECT f.doc_id, ntk,
-       |$cumCols
-       |  FROM flags0 f JOIN wk USING (k)
-       |  LEFT JOIN nd ON f.doc_id = nd.b_id
-       |  LEFT JOIN dc USING (doc_id)
-       |  JOIN lg USING (doc_id) JOIN qs USING (doc_id)
-       |)""".stripMargin
-      .replace("@MH@", minhashPairsSql)
-      .replace("@DECON@", deconSql)
-      .replace("@LANG@", langIdSql)
-      .replace("@QUAL@", docQualitySql)
-  }
-
-  private lazy val docQualitySql: String =
-    s"""WITH base AS (
-         |  SELECT doc_id, text, $toksSql AS tk FROM documents
-         |), stats AS (
-         |  SELECT doc_id, text, len(tk) AS n_words,
-         |    CASE WHEN len(tk) = 0 THEN 0.0
-         |      ELSE CAST(list_sum(list_transform(tk, t -> length(t))) AS DOUBLE)
-         |        / CAST(len(tk) AS DOUBLE) END AS mean_word_len,
-         |    CASE WHEN len(tk) = 0 THEN 0.0
-         |      ELSE CAST(len(list_filter(tk,
-         |          t -> list_contains($stopwordsSql, lower(t)))) AS DOUBLE)
-         |        / CAST(len(tk) AS DOUBLE) END AS stopword_ratio,
-         |    CASE WHEN length(text) = 0 THEN 0.0
-         |      ELSE CAST(length(regexp_replace(text,
-         |          '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE)
-         |        / CAST(length(text) AS DOUBLE) END AS punct_ratio
-         |  FROM base)
-         |SELECT doc_id, n_words, round(mean_word_len, 6) AS mean_word_len,
-         |  round(stopword_ratio, 6) AS stopword_ratio,
-         |  round(punct_ratio, 6) AS punct_ratio,
-         |  round(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-         |    * (1.0 - punct_ratio) * (0.5 + stopword_ratio / 2.0), 6) AS quality
-         |FROM stats ORDER BY doc_id""".stripMargin
-
-  private lazy val langIdSql: String = {
-      val profiles = TextAnalysis.langProfiles
-      val scoreCols = profiles.map { case (lang, words) =>
-        val lst = words.map(w => s"'$w'").mkString("[", ", ", "]")
-        s"len(list_filter(tk, t -> list_contains($lst, lower(t)))) AS s_$lang"
-      }.mkString(",\n    ")
-      s"""WITH base AS (SELECT doc_id, $toksSql AS tk FROM documents),
-         |scored AS (SELECT doc_id,
-         |    $scoreCols
-         |  FROM base)
-         |SELECT doc_id,
-         |  CASE WHEN s_de = 0 AND s_en = 0 AND s_es = 0 AND s_fr = 0 THEN 'und'
-         |    WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr THEN 'de'
-         |    WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
-         |    WHEN s_es >= s_fr THEN 'es'
-         |    ELSE 'fr' END AS lang_pred
-         |FROM scored ORDER BY doc_id""".stripMargin
-    }
-
-  private lazy val deconSql: String =
-    """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE
-        |      WHEN len(list_filter(regexp_split_to_array(text, '\s+'),
-        |        x -> x <> '')) < 5
-        |      THEN [array_to_string(list_filter(
-        |        regexp_split_to_array(text, '\s+'), x -> x <> ''), ' ')]
-        |      ELSE [array_to_string(list_filter(
-        |          regexp_split_to_array(text, '\s+'), x -> x <> '')[i+1:i+5],
-        |          ' ')
-        |        for i in range(0, len(list_filter(
-        |          regexp_split_to_array(text, '\s+'), x -> x <> '')) - 4)]
-        |      END) AS shingles
-        |  FROM documents
-        |), ev AS (
-        |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id < 10
-        |), corpus AS (
-        |  SELECT doc_id, unnest(shingles) AS s FROM sh WHERE doc_id >= 10)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
-        |FROM corpus JOIN ev USING (s)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** DuckDB CTE chain for the V-optimal DP over `dense$sfx`: dense
-    * prefix sums -> SSE table -> 4 unrolled argmin rounds -> backtrack
-    * -> `bounds$sfx` (bucket, seg_lo, seg_hi). Follows [[gridCtes]].
-    * Every table name carries `sfx` so two constructions (q305: direct
-    * vs distributed-merge) coexist in one statement. */
-  private def dpCtes(sfx: String): String = {
-    val dpRounds = (2 to 4).map { j =>
-      val prev = s"b${j - 1}$sfx"
-      s"""b$j$sfx AS MATERIALIZED (
-         |  SELECT i, cost, argm FROM (
-         |    SELECT s.b AS i, $prev.i AS argm,
-         |      round($prev.cost + s.sse, 9) AS cost,
-         |      row_number() OVER (PARTITION BY s.b
-         |        ORDER BY round($prev.cost + s.sse, 9), $prev.i)
-         |        AS rk
-         |    FROM $prev JOIN sse$sfx s ON s.a = $prev.i + 1)
-         |  WHERE rk = 1
-         |)""".stripMargin
-    }.mkString(", ")
-    s"""pre$sfx AS MATERIALIZED (
-       |  SELECT t, CAST(SUM(f) OVER (ORDER BY t
-       |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS p,
-       |    CAST(SUM(f * f) OVER (ORDER BY t
-       |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS p2
-       |  FROM dense$sfx
-       |  UNION ALL SELECT 0, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-       |), sse$sfx AS MATERIALIZED (
-       |  SELECT lo.t + 1 AS a, hi.t AS b,
-       |    round(CAST(hi.p2 - lo.p2 AS DOUBLE)
-       |      - CAST(hi.p - lo.p AS DOUBLE)
-       |        * CAST(hi.p - lo.p AS DOUBLE)
-       |        / CAST(hi.t - lo.t AS DOUBLE), 9) AS sse
-       |  FROM pre$sfx hi JOIN pre$sfx lo ON lo.t < hi.t WHERE hi.t >= 1
-       |), b1$sfx AS MATERIALIZED (
-       |  SELECT b AS i, sse AS cost, 0 AS argm FROM sse$sfx WHERE a = 1
-       |), $dpRounds,
-       |m3$sfx AS (SELECT argm AS m FROM b4$sfx WHERE i = 32),
-       |m2$sfx AS (SELECT b3$sfx.argm AS m FROM b3$sfx, m3$sfx
-       |  WHERE b3$sfx.i = m3$sfx.m),
-       |m1$sfx AS (SELECT b2$sfx.argm AS m FROM b2$sfx, m2$sfx
-       |  WHERE b2$sfx.i = m2$sfx.m),
-       |bounds$sfx AS (
-       |  SELECT 1 AS bucket, 1 AS seg_lo, m1$sfx.m AS seg_hi FROM m1$sfx
-       |  UNION ALL SELECT 2, m1$sfx.m + 1, m2$sfx.m FROM m1$sfx, m2$sfx
-       |  UNION ALL SELECT 3, m2$sfx.m + 1, m3$sfx.m FROM m2$sfx, m3$sfx
-       |  UNION ALL SELECT 4, m3$sfx.m + 1, 32 FROM m3$sfx
-       |)""".stripMargin
-  }
-
-  /** Shared DuckDB CTE chain for the V-optimal DP (q297/q299) with
-    * unsuffixed table names. Follows `orderGridCtes`. */
-  private lazy val vOptDpCtes: String = dpCtes("")
-
-  /** Equi-rank grid chain from `hist$sfx` (v, c) — plus the shared `ts`
-    * tally — to `dense$sfx` (t = 1..32, f): the DuckDB twin of
-    * [[operators.Stats.equiRankGridFreqs]], suffixed like [[dpCtes]]. */
-  private def gridCtes(sfx: String): String =
-    s"""cum$sfx AS MATERIALIZED (
-       |  SELECT v, c, CAST(SUM(c) OVER (ORDER BY v
-       |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-       |  FROM hist$sfx
-       |), tot$sfx AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM hist$sfx),
-       |grid$sfx AS MATERIALIZED (
-       |  SELECT t, MIN(v) AS gv FROM ts, tot$sfx, cum$sfx
-       |  WHERE cum >= (t * n + 31) // 32 GROUP BY 1
-       |), seg$sfx AS (
-       |  SELECT v, c, MIN(t) AS t FROM hist$sfx JOIN grid$sfx ON v <= gv
-       |  GROUP BY 1, 2
-       |), freqs$sfx AS (SELECT t, CAST(SUM(c) AS BIGINT) AS f
-       |  FROM seg$sfx GROUP BY 1),
-       |dense$sfx AS (
-       |  SELECT ts.t, coalesce(f, 0) AS f FROM ts
-       |  LEFT JOIN freqs$sfx USING (t)
-       |)""".stripMargin
-
-  /** Shared DuckDB CTE prefix for the q297/q298/q299 synopsis family:
-    * order totals in cents -> value histogram -> 32-point equi-rank
-    * grid -> dense (t = 1..32, f) frequency sequence. */
-  private lazy val orderGridCtes: String =
-    """vals AS (
-      |  SELECT CAST(o_totalprice * 100 AS BIGINT) AS v FROM orders
-      |), hist AS MATERIALIZED (
-      |  SELECT v, CAST(count(*) AS BIGINT) AS c FROM vals GROUP BY 1
-      |), ts AS (SELECT unnest(range(1, 33)) AS t),
-      |""".stripMargin + gridCtes("")
-
-  /** DuckDB replay of [[operators.Similarity.nnDescentGraph]]
-    * (bucketTarget=16, the operator default q286/q295 use) plus the
-    * q40-style exact-truth recall readout
-    * for vec_id < 30: md5-bucket init, `rounds` unrolled
-    * neighbors-of-neighbors expansions, each cut to top-k by the
-    * decimal-exact cosine. The oracle skips the Spark side's
-    * double-kernel PRUNE (its k+margin margin makes the two rankings
-    * identical — the q40 two-phase contract) and ranks every candidate
-    * exactly. */
-  private def nnDescentSql(k: Int, rounds: Int, spaces: Int,
-                           bucketTarget: Int, kTruth: Int): String = {
-    def topk(cand: String, out: String): String =
-      s"""$out AS MATERIALIZED (
-         |  SELECT v, u, sim, rk FROM (
-         |    SELECT v, u, sim,
-         |      CAST(row_number() OVER (PARTITION BY v
-         |        ORDER BY sim DESC, u) AS INT) AS rk
-         |    FROM (
-         |      SELECT v, u, round($cosSql, 6) AS sim FROM (
-         |        SELECT v, u,
-         |          ${dotSql("qv", "cv")} AS dot,
-         |          ${normSql("qv")} AS nq,
-         |          ${normSql("cv")} AS nc
-         |        FROM (
-         |          SELECT c.v, c.u, pq.pvec AS qv, pc.pvec AS cv
-         |          FROM $cand c JOIN pts pq ON c.v = pq.pid
-         |            JOIN pts pc ON c.u = pc.pid))))
-         |  WHERE rk <= $k
-         |)""".stripMargin
-    val roundCtes = (1 to rounds).map { r =>
-      val prev = s"e${r - 1}"
-      s"""und$r AS (
-         |  SELECT DISTINCT v, u FROM (
-         |    SELECT v, u FROM $prev
-         |    UNION ALL SELECT u AS v, v AS u FROM $prev)
-         |), cand$r AS (
-         |  SELECT DISTINCT v, u FROM (
-         |    SELECT a.v, c.u FROM und$r a JOIN und$r c ON a.u = c.v
-         |    WHERE c.u <> a.v
-         |    UNION ALL SELECT v, u FROM $prev)
-         |), ${topk(s"cand$r", s"e$r")}""".stripMargin
-    }.mkString(", ")
-    val wbCtes = (0 until spaces).map { r =>
-      s"""wb$r AS MATERIALIZED (
-         |  SELECT pid, (list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-         |      (strpos('0123456789abcdef',
-         |        substr(md5('nnd$r|' || CAST(pid AS VARCHAR)), i + 1, 1))
-         |        - 1)
-         |      for i in range(0, 8)]) % b) AS bk
-         |  FROM pts, nb
-         |)""".stripMargin
-    }.mkString(", ")
-    val initUnion = (0 until spaces).map { r =>
-      s"""    SELECT a.pid AS v, c.pid AS u
-         |    FROM wb$r a JOIN wb$r c ON a.bk = c.bk AND a.pid <> c.pid"""
-        .stripMargin
-    }.mkString("\n    UNION ALL\n")
-    s"""WITH pts AS MATERIALIZED (
-       |  SELECT vec_id AS pid, embedding AS pvec FROM embeddings
-       |), nb AS (
-       |  SELECT greatest(CAST(ceil(CAST(COUNT(*) AS DOUBLE)
-       |    / $bucketTarget.0) AS BIGINT), 1) AS b FROM pts
-       |), $wbCtes, cand0 AS (
-       |  SELECT DISTINCT v, u FROM (
-       |$initUnion)
-       |), ${topk("cand0", "e0")}, $roundCtes,
-       |q AS (
-       |  SELECT vec_id AS qid, embedding AS qv FROM embeddings
-       |  WHERE vec_id < 30
-       |), tp AS (
-       |  SELECT qid, cid,
-       |    ${dotSql("qv", "cv")} AS dot,
-       |    ${normSql("qv")} AS nq,
-       |    ${normSql("cv")} AS nc
-       |  FROM q, (SELECT vec_id AS cid, embedding AS cv
-       |           FROM embeddings) c
-       |  WHERE qid <> cid
-       |), truth AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT qid AS query_id, cid AS neighbor_id,
-       |      CAST(row_number() OVER (PARTITION BY qid
-       |        ORDER BY round($cosSql, 6) DESC, cid) AS INT) AS rk
-       |    FROM tp)
-       |  WHERE rk <= $kTruth
-       |)
-       |SELECT t.query_id, CAST(COUNT(e.v) AS BIGINT) AS found,
-       |  round(CAST(COUNT(e.v) AS DOUBLE) / $kTruth.0, 6) AS recall
-       |FROM truth t LEFT JOIN e$rounds e
-       |  ON e.v = t.query_id AND e.u = t.neighbor_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** DuckDB replay of [[operators.Similarity.nnGraphInsert]] over the
-    * persisted q295 base graph (base = vec_id >= 50 rebuilt from
-    * scratch — equal to the on-disk artifact by construction) plus the
-    * insert expansion for vec_id < 50 and the exact-truth recall
-    * readout. Bucket geometry (nb.b) comes from the BASE count, exactly
-    * as the operator replays the stored index's layout. */
-  private def nnInsertSql(k: Int, rounds: Int, spaces: Int,
-                          bucketTarget: Int, kTruth: Int): String = {
-    def topk(cand: String, out: String, qSrc: String,
-             cSrc: String): String =
-      s"""$out AS MATERIALIZED (
-         |  SELECT v, u, sim, rk FROM (
-         |    SELECT v, u, sim,
-         |      CAST(row_number() OVER (PARTITION BY v
-         |        ORDER BY sim DESC, u) AS INT) AS rk
-         |    FROM (
-         |      SELECT v, u, round($cosSql, 6) AS sim FROM (
-         |        SELECT v, u,
-         |          ${dotSql("qv", "cv")} AS dot,
-         |          ${normSql("qv")} AS nq,
-         |          ${normSql("cv")} AS nc
-         |        FROM (
-         |          SELECT c.v, c.u, pq.pvec AS qv, pc.pvec AS cv
-         |          FROM $cand c JOIN $qSrc pq ON c.v = pq.pid
-         |            JOIN $cSrc pc ON c.u = pc.pid))))
-         |  WHERE rk <= $k
-         |)""".stripMargin
-    def wbCte(name: String, src: String, r: Int): String =
-      s"""$name AS MATERIALIZED (
-         |  SELECT pid, (list_sum([CAST(round(pow(16, 7 - i)) AS BIGINT) *
-         |      (strpos('0123456789abcdef',
-         |        substr(md5('nnd$r|' || CAST(pid AS VARCHAR)), i + 1, 1))
-         |        - 1)
-         |      for i in range(0, 8)]) % b) AS bk
-         |  FROM $src, nb
-         |)""".stripMargin
-    val wbCtes = (0 until spaces)
-      .map(r => wbCte(s"wb$r", "pts", r)).mkString(", ")
-    val nwbCtes = (0 until spaces)
-      .map(r => wbCte(s"nwb$r", "npts", r)).mkString(", ")
-    val initUnion = (0 until spaces).map { r =>
-      s"""    SELECT a.pid AS v, c.pid AS u
-         |    FROM wb$r a JOIN wb$r c ON a.bk = c.bk AND a.pid <> c.pid"""
-        .stripMargin
-    }.mkString("\n    UNION ALL\n")
-    val insUnion = (0 until spaces).map { r =>
-      s"""    SELECT n.pid AS v, c.pid AS u
-         |    FROM nwb$r n JOIN wb$r c ON n.bk = c.bk""".stripMargin
-    }.mkString("\n    UNION ALL\n")
-    val roundCtes = (1 to rounds).map { r =>
-      val prev = s"e${r - 1}"
-      s"""und$r AS (
-         |  SELECT DISTINCT v, u FROM (
-         |    SELECT v, u FROM $prev
-         |    UNION ALL SELECT u AS v, v AS u FROM $prev)
-         |), cand$r AS (
-         |  SELECT DISTINCT v, u FROM (
-         |    SELECT a.v, c.u FROM und$r a JOIN und$r c ON a.u = c.v
-         |    WHERE c.u <> a.v
-         |    UNION ALL SELECT v, u FROM $prev)
-         |), ${topk(s"cand$r", s"e$r", "pts", "pts")}""".stripMargin
-    }.mkString(", ")
-    s"""WITH pts AS MATERIALIZED (
-       |  SELECT vec_id AS pid, embedding AS pvec FROM embeddings
-       |  WHERE vec_id >= 50
-       |), nb AS (
-       |  SELECT greatest(CAST(ceil(CAST(COUNT(*) AS DOUBLE)
-       |    / $bucketTarget.0) AS BIGINT), 1) AS b FROM pts
-       |), npts AS MATERIALIZED (
-       |  SELECT vec_id AS pid, embedding AS pvec FROM embeddings
-       |  WHERE vec_id < 50
-       |), $wbCtes, $nwbCtes, cand0 AS (
-       |  SELECT DISTINCT v, u FROM (
-       |$initUnion)
-       |), ${topk("cand0", "e0", "pts", "pts")}, $roundCtes,
-       |ic0 AS (
-       |  SELECT DISTINCT v, u FROM (
-       |$insUnion)
-       |), hop AS (
-       |  SELECT DISTINCT i.v, e.u FROM ic0 i JOIN e$rounds e
-       |  ON i.u = e.v
-       |), icand AS (
-       |  SELECT DISTINCT v, u FROM (
-       |    SELECT v, u FROM ic0 UNION ALL SELECT v, u FROM hop)
-       |), ${topk("icand", "ins", "npts", "pts")},
-       |tp AS (
-       |  SELECT n.pid AS qid, c.pid AS cid,
-       |    ${dotSql("qv", "cv")} AS dot,
-       |    ${normSql("qv")} AS nq,
-       |    ${normSql("cv")} AS nc
-       |  FROM (SELECT pid, pvec AS qv FROM npts) n,
-       |    (SELECT pid, pvec AS cv FROM pts) c
-       |  WHERE n.pid <> c.pid
-       |), truth AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT qid AS query_id, cid AS neighbor_id,
-       |      CAST(row_number() OVER (PARTITION BY qid
-       |        ORDER BY round($cosSql, 6) DESC, cid) AS INT) AS rk
-       |    FROM tp)
-       |  WHERE rk <= $kTruth
-       |)
-       |SELECT t.query_id, CAST(COUNT(i.v) AS BIGINT) AS found,
-       |  round(CAST(COUNT(i.v) AS DOUBLE) / $kTruth.0, 6) AS recall
-       |FROM truth t LEFT JOIN ins i
-       |  ON i.v = t.query_id AND i.u = t.neighbor_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** DuckDB replay of [[operators.Retrieval.queryLikelihood]] (Dirichlet
-    * mu=100): `termsValues` is the VALUES list for the query-term table,
-    * e.g. "('spark'), ('join'), ('window')". Nestable as a subquery. */
-  private def qlmSql(termsValues: String, topN: Int): String =
-    s"""WITH dl AS MATERIALIZED (
-       |  SELECT doc_id, len($toksSql) AS dl FROM documents
-       |), tot AS (SELECT CAST(SUM(dl) AS BIGINT) AS tt FROM dl),
-       |q(t) AS (VALUES $termsValues),
-       |tfm AS (
-       |  SELECT doc_id, t, CAST(COUNT(*) AS DOUBLE) AS tf
-       |  FROM (SELECT doc_id, unnest($toksSql) AS t FROM documents)
-       |  WHERE t IN (SELECT t FROM q) GROUP BY 1, 2
-       |), cfp AS MATERIALIZED (
-       |  SELECT t, round(CAST(CAST(COUNT(*) AS BIGINT) AS DOUBLE)
-       |    / CAST(tt AS DOUBLE), 12) AS pw
-       |  FROM (SELECT doc_id, unnest($toksSql) AS t FROM documents),
-       |    tot
-       |  WHERE t IN (SELECT t FROM q) GROUP BY t, tt
-       |), cs AS (
-       |  SELECT SUM(CAST(round(ln(100.0 * pw), 9) AS DECIMAL(38,9)))
-       |      AS c0,
-       |    CAST(COUNT(*) AS INTEGER) AS nq
-       |  FROM cfp
-       |), adj AS (
-       |  SELECT doc_id, CAST(COUNT(*) AS INTEGER) AS n_match,
-       |    SUM(CAST(round(ln(tf + 100.0 * pw) - ln(100.0 * pw), 9)
-       |      AS DECIMAL(38,9))) AS adj
-       |  FROM tfm JOIN cfp USING (t) GROUP BY 1
-       |), scored AS (
-       |  SELECT dl.doc_id, coalesce(n_match, 0) AS n_match,
-       |    round(CAST(c0 AS DOUBLE)
-       |      + CAST(coalesce(adj, CAST(0 AS DECIMAL(38,9)))
-       |          AS DOUBLE)
-       |      - CAST(nq AS DOUBLE) * ln(CAST(dl AS DOUBLE) + 100.0),
-       |      6) AS score
-       |  FROM dl LEFT JOIN adj USING (doc_id), cs
-       |)
-       |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-       |    AS INTEGER) AS rk, doc_id, n_match, score
-       |FROM scored ORDER BY score DESC, doc_id LIMIT $topN""".stripMargin
-
-  private def bm25Sql(termsInList: String, topN: Int): String =
-    s"""WITH dl AS (
-       |  SELECT doc_id,
-       |    len(list_filter(regexp_split_to_array(text, '\\s+'),
-       |      x -> x <> '')) AS dl
-       |  FROM documents
-       |), stats AS (
-       |  SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-       |    CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avgdl
-       |  FROM dl
-       |), tf AS (
-       |  SELECT doc_id, t, CAST(COUNT(*) AS DOUBLE) AS tf
-       |  FROM (
-       |    SELECT doc_id,
-       |      unnest(list_filter(regexp_split_to_array(text, '\\s+'),
-       |        x -> x <> '')) AS t
-       |    FROM documents)
-       |  WHERE t IN ($termsInList)
-       |  GROUP BY 1, 2
-       |), df AS (
-       |  SELECT t, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY 1
-       |), scored AS (
-       |  SELECT tf.doc_id,
-       |    ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-       |      * (tf * 2.2 / (tf + 1.2
-       |        * (0.25 + 0.75 * CAST(dl.dl AS DOUBLE) / avgdl))) AS s
-       |  FROM tf JOIN df USING (t) JOIN dl USING (doc_id) CROSS JOIN stats
-       |), agg AS (
-       |  SELECT doc_id, CAST(COUNT(*) AS INTEGER) AS n_terms,
-       |    round(CAST(SUM(CAST(s AS DECIMAL(38,6))) AS DOUBLE), 6) AS score
-       |  FROM scored GROUP BY 1
-       |)
-       |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-       |    AS INTEGER) AS rk,
-       |  doc_id, n_terms, score
-       |FROM agg ORDER BY score DESC, doc_id LIMIT $topN""".stripMargin
 }

@@ -1785,7 +1785,9 @@ object Stats {
     * Costs carry as round(9) doubles from exact integer prefix sums
     * (d² ≤ n² is exact in a double for any realistic n); ties in the
     * DP argmin break to the SMALLEST split, so the oracle's unrolled
-    * replay is bit-identical. Returns one row per bucket:
+    * replay is bit-identical. Each `t` appears at most once in `freqs`
+    * (a duplicate is rejected, not summed or overwritten); a missing `t`
+    * counts as frequency 0. Returns one row per bucket:
     * (bucket, seg_lo, seg_hi, n_rows, sse). */
   def vOptimalDp(freqs: DataFrame, g: Int, k: Int): DataFrame = {
     require(g >= k && k >= 2)
@@ -1810,8 +1812,13 @@ object Stats {
       if (x.isNaN || x.isInfinite) x
       else BigDecimal(x).setScale(s, BigDecimal.RoundingMode.HALF_UP)
         .toDouble
-    val fMap = freqs.select(col("t").cast("int"), col("f").cast("long"))
-      .as[(Int, Long)].collect().toMap
+    val fRows = freqs.select(col("t").cast("int"), col("f").cast("long"))
+      .as[(Int, Long)].collect()
+    val fMap = fRows.toMap
+    require(fMap.size == fRows.length,
+      s"vOptimalDp: duplicate t values in freqs " +
+        fRows.groupBy(_._1).collect { case (t, rs) if rs.length > 1 => t }
+          .toSeq.sorted.mkString("(", ", ", ")"))
     val p = new Array[Long](g + 1)   // prefix sums, p(0) = 0 sentinel
     val p2 = new Array[Long](g + 1)
     for (t <- 1 to g) {

@@ -9,9 +9,7 @@ import org.apache.spark.sql.DataFrame
   *
   * The reference stages exactly one object per bundle, named by the bundle
   * start epoch (`internal/service.go:330,337`). For parity the writer
-  * coalesces to one part and renames it; at 100 TB a bundle would instead
-  * stay a multi-part prefix (`partitioned = true`) and the warehouse load
-  * reads the whole prefix — same contract, no single-file bottleneck.
+  * coalesces to one part and renames it.
   */
 object CsvStage {
 
@@ -22,30 +20,26 @@ object CsvStage {
     * object with a header row and RFC4180 quoting (quote doubling, not
     * backslash escapes — Go's encoding/csv convention). Returns the file
     * reference. */
-  def writeBundleCsv(df: DataFrame, storage: Storage, name: String,
-                     partitioned: Boolean = false): String = {
+  def writeBundleCsv(df: DataFrame, storage: Storage, name: String): String = {
     val spark = df.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val tmp = storage.getFileReference(s"_tmp_$name")
-    val writer = (if (partitioned) df else df.coalesce(1)).write
+    df.coalesce(1).write
       .option("header", "true")
       .option("escape", "\"")     // RFC4180: "" not \"
       .option("emptyValue", "")   // absent fields -> empty cell, not ""
       .mode("overwrite")
-    writer.csv(tmp)
-    if (partitioned) tmp
-    else {
-      val tmpPath = new Path(tmp)
-      val fs = hadoopFs(tmpPath, conf)
-      val part = fs.listStatus(tmpPath)
-        .map(_.getPath).find(_.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
-      val dest = new Path(storage.getFileReference(name))
-      fs.delete(dest, false)
-      fs.rename(part, dest)
-      fs.delete(tmpPath, true)
-      dest.toString
-    }
+      .csv(tmp)
+    val tmpPath = new Path(tmp)
+    val fs = hadoopFs(tmpPath, conf)
+    val part = fs.listStatus(tmpPath)
+      .map(_.getPath).find(_.getName.startsWith("part-"))
+      .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
+    val dest = new Path(storage.getFileReference(name))
+    fs.delete(dest, false)
+    fs.rename(part, dest)
+    fs.delete(tmpPath, true)
+    dest.toString
   }
 
   /** JSON passthrough (SaveAsJson mode): the raw export saved as one JSON
@@ -56,45 +50,39 @@ object CsvStage {
     * The rows are serialized DISTRIBUTED (`df.toJSON` written as text
     * parts); the single-array framing is a driver-side streaming
     * concatenation of the part files — O(one line) driver memory, never a
-    * collect. With `partitioned = true` the framing is skipped entirely and
-    * the bundle stays a JSON-lines prefix (the 100 TB path; loaders read
-    * the whole prefix). */
-  def writeBundleJson(df: DataFrame, storage: Storage, name: String,
-                      partitioned: Boolean = false): String = {
+    * collect. */
+  def writeBundleJson(df: DataFrame, storage: Storage, name: String): String = {
     val spark = df.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val tmp = storage.getFileReference(s"_tmp_$name")
     df.toJSON.write.mode("overwrite").text(tmp)
-    if (partitioned) tmp
-    else {
-      val tmpPath = new Path(tmp)
-      val fs = hadoopFs(tmpPath, conf)
-      // part order = partition order: the writer names parts by partition id
-      val parts = fs.listStatus(tmpPath).map(_.getPath)
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val dest = new Path(storage.getFileReference(name))
-      fs.delete(dest, false)
-      val out = fs.create(dest, true)
-      try {
-        out.write('[')
-        var first = true
-        parts.foreach { p =>
-          val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-            fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
-          try {
-            var line = in.readLine()
-            while (line != null) {
-              if (!first) out.write(',')
-              out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              first = false
-              line = in.readLine()
-            }
-          } finally in.close()
-        }
-        out.write(']')
-      } finally out.close()
-      fs.delete(tmpPath, true)
-      dest.toString
-    }
+    val tmpPath = new Path(tmp)
+    val fs = hadoopFs(tmpPath, conf)
+    // part order = partition order: the writer names parts by partition id
+    val parts = fs.listStatus(tmpPath).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val dest = new Path(storage.getFileReference(name))
+    fs.delete(dest, false)
+    val out = fs.create(dest, true)
+    try {
+      out.write('[')
+      var first = true
+      parts.foreach { p =>
+        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+          fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
+        try {
+          var line = in.readLine()
+          while (line != null) {
+            if (!first) out.write(',')
+            out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            first = false
+            line = in.readLine()
+          }
+        } finally in.close()
+      }
+      out.write(']')
+    } finally out.close()
+    fs.delete(tmpPath, true)
+    dest.toString
   }
 }

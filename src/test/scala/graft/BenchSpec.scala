@@ -11,26 +11,59 @@ import scala.collection.mutable
   * make that class of artifact impossible to re-record. */
 class BenchSpec extends SparkSpec {
 
-  test("query/oracle key symmetry: every query has an oracle and every " +
-    "oracle names a query (the driver's correctness gate contract)") {
-    val qs = SparkEntry.queries.keySet
-    val os = SparkEntry.oracleSql.keySet
-    assert(qs == os,
-      s"only-in-queries=${(qs -- os).toSeq.sorted} " +
-        s"only-in-oracle=${(os -- qs).toSeq.sorted}")
+  test("the query registry rejects a duplicate name when it is built") {
+    val body: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+    val e = intercept[IllegalArgumentException](QuerySpec.index(Seq(
+      QuerySpec("qa", body, "SELECT 1"), QuerySpec("qb", body, "SELECT 2"),
+      QuerySpec("qa", body, "SELECT 3"))))
+    assert(e.getMessage.contains("duplicate query names: qa"), e.getMessage)
+    assert(SparkEntry.specs.size == 322)
   }
 
-  test("bench tier consistency: every tier overrides a real query and " +
-    "every tier has a recorded slice denominator") {
-    val qs = SparkEntry.queries.keySet
-    val tier = SparkEntry.largeBenchTier.keySet
-    assert(tier.subsetOf(qs), (tier -- qs).toString)
-    assert(SparkEntry.largeBenchTierSlice.keySet == tier,
-      s"slice map drifted: only-in-slice=" +
-        s"${SparkEntry.largeBenchTierSlice.keySet -- tier} " +
-        s"only-in-tier=${tier -- SparkEntry.largeBenchTierSlice.keySet}")
-    assert(SparkEntry.largeBenchTierSlice.values.forall(_ >= 2),
-      "a 1/1 'tier' would be a silent no-op")
+  test("the sf1 tiers derive from the specs: seven tiered queries with " +
+    "today's slice denominators") {
+    val tiers = SparkEntry.specs.values.flatMap(q => q.tier.map(q.name -> _.n))
+    assert(tiers.toMap == Map(
+      "q201_setjoin_exact" -> 4, "q209_lsh_recall_cert" -> 8,
+      "q263_lof" -> 8, "q304_weighted_neardup" -> 8,
+      "q301_dup_transitivity" -> 4, "q310_dedup_threshold_sweep" -> 4,
+      "q286_nn_descent" -> 2))
+    assert(Bench.tierSlice("q209_lsh_recall_cert") == 8)
+    assert(Bench.tierSlice("q01_pricing_summary") == 1)
+  }
+
+  test("a tier body is the graded body over a hash-sampled slice of its " +
+    "table; the graded body itself reads the whole table") {
+    val docs = spark.range(400).toDF("doc_id")
+    val dir = java.nio.file.Files.createTempDirectory("tier").toString
+    docs.write.parquet(s"$dir/documents.parquet")
+    val q = QuerySpec("q_tiered",
+      (s, d) => registry.SparkHelpers.t(s, d, "documents"), "",
+      tier = Some(Slice("documents", "doc_id", 4)))
+    val sliced = q.tierBody(spark, dir)
+    assert(q.body(spark, dir).count() == 400)
+    assert(sliced.count() == registry.SparkHelpers
+      .hashSample(docs, "doc_id", 4).count())
+    assert(sliced.count() > 0 && sliced.count() < 400)
+  }
+
+  test("every chunk line is one JSON object carrying errors_n and " +
+    "graded_passes next to its slice of the graded map") {
+    val names = (1 to 20).map(i => f"q$i%02d")
+    val times = names.map(_ -> 0.5).toMap
+    val lines = Bench.chunkLines(times, names, "sf", 2, 3)
+    assert(lines.size == 3)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    lines.zipWithIndex.foreach { case (l, i) =>
+      val node = mapper.readTree(l)
+      assert(node.get("metric").asText == "total")
+      assert(node.get("value").asDouble == 10.0)
+      assert(node.get("chunk").asInt == i + 1)
+      assert(node.get("chunks").asInt == 3)
+      assert(node.get("graded_passes").asInt == 2)
+      assert(node.get("errors_n").asInt == 3)
+      assert(node.get("queries").size == (if (i < 2) 8 else 4))
+    }
   }
 
   private val good: (SparkSession, String) => DataFrame =
@@ -281,8 +314,7 @@ class BenchSpec extends SparkSpec {
     val tiers = node.get("large_tiered")
     assert(tiers.size == 2, tiers.toString)
     applied.foreach { n =>
-      assert(tiers.get(n).asInt ==
-        SparkEntry.largeBenchTierSlice(n), tiers.toString)
+      assert(tiers.get(n).asInt == Bench.tierSlice(n), tiers.toString)
     }
     // a registered-but-unapplied tier (e.g. q273 skipped this pass)
     // must be absent
@@ -408,12 +440,7 @@ class BenchSpec extends SparkSpec {
       "q_old" -> Bench.Cert(50.0, 4),              // pre-ratio stamp
       "q37_dedup_minhash_lsh" -> Bench.Cert(90.0, 6, 60.0), // exempt
       "q209_lsh_recall_cert" -> Bench.Cert(9.0, 6, 99.0))   // tiered
-    assert(Bench.scalingViolations(hist, 25.0, Bench.scalingExempt)
-      == Seq("q_super"))
-    // every exemption names a real query (a renamed query must not
-    // silently un-exempt itself)
-    Bench.scalingExempt.foreach(n =>
-      assert(SparkEntry.queries.contains(n), s"stale exemption: $n"))
+    assert(Bench.scalingViolations(hist, 25.0) == Seq("q_super"))
   }
 
   test("the checked-in rotation history carries no scaling violation: " +
@@ -421,7 +448,7 @@ class BenchSpec extends SparkSpec {
     "cross-round eyeball (the q273 lesson, generalized)") {
     val (_, hist) = Bench.readHistory()
     assert(hist.nonEmpty, "git-tracked rotation history must exist")
-    val bad = Bench.scalingViolations(hist, 25.0, Bench.scalingExempt)
+    val bad = Bench.scalingViolations(hist, 25.0)
     assert(bad.isEmpty,
       s"superlinear sf1/graded scaling certs recorded for: " +
         bad.mkString(", "))

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.BlocklistHits
+import graft.registry.SparkHelpers
 
 /** Representation benchmark for the blocklist automaton: the SAME
   * pattern set built both ways (`BlocklistHits.build(pats, denseLimit)`
@@ -16,13 +16,7 @@ import graft.functions.BlocklistHits
 object BlocklistRepBench {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("blocklist-rep-bench")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create("blocklist-rep-bench")
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select("text").collect().map(r =>
         UTF8String.fromString(Option(r.getString(0)).getOrElse("")))
@@ -38,9 +32,9 @@ object BlocklistRepBench {
       // referenced, not copied: the benchmark must price the pattern
       // sets the production queries actually run
       "q315 phrase blocklist (8 pats)" ->
-        SparkEntry.blocklistPatterns,
+        SparkHelpers.blocklistPatterns,
       "q323 trigram dictionary (3375 pats)" ->
-        SparkEntry.dictBlocklistPatterns,
+        SparkHelpers.dictBlocklistPatterns,
       "synthetic PII dictionary (10k pats)" ->
         (1 to 10000).map(_ => word(8 + rnd.nextInt(5))).distinct)
 

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.registry.SparkHelpers
+
 /** Round-13 optimization pins.
   *
   * 1. [[operators.FanOut]] — the unsplittable-input remedy must (a) widen
@@ -10,7 +12,7 @@ import org.apache.spark.sql.functions._
   *    no-op guarantee: at scale the scan has enough splits and the
   *    exchange must not exist), and (c) never change row content.
   *
-  * 2. [[SparkEntry.copurchasePairCounts]] — the basket-explode rewrite of
+  * 2. [[SparkHelpers.copurchasePairCounts]] — the basket-explode rewrite of
   *    the co-purchase edge build must produce the IDENTICAL (pa, pb, cm)
   *    multiset as the orderkey self-join it replaced, including the two
   *    tricky cases: a part appearing twice in one order (contributes no
@@ -50,7 +52,7 @@ class FanOutSpec extends SparkSpec {
       (4L, 60L),
       (5L, 20L), (5L, 10L)
     ).toDF("l_orderkey", "l_partkey")
-    val basket = SparkEntry.copurchasePairCounts(li)
+    val basket = SparkHelpers.copurchasePairCounts(li)
       .orderBy($"pa", $"pb")
       .as[(Long, Long, Long)].collect().toSeq
     // reference: the replaced self-join formulation, verbatim
@@ -122,7 +124,7 @@ class FanOutSpec extends SparkSpec {
       (2L, 10L), (2L, 20L),
       (3L, 10L), (3L, 30L)
     ).toDF("l_orderkey", "l_partkey")
-    val edges = SparkEntry.copurchaseEdges(li)
+    val edges = SparkHelpers.copurchaseEdges(li)
       .as[(Long, Long)].collect().toSet
     assert(edges == Set((10L, 20L)))
   }

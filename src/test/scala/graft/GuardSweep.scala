@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical._
 
 /** The entity-scale boundedness walker (enforced by PlanAuditSpec's
@@ -102,13 +101,7 @@ object GuardSweep {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = new java.io.PrintWriter("/tmp/guard_offenders.txt")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("guard-sweep")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create("guard-sweep")
     spark.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("guard-ckpt").toString)
     for ((q, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {

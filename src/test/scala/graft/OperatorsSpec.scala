@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 import graft.operators.{Dedup, Sessionize, Similarity, TextAnalysis}
+import graft.registry.SparkHelpers
 
 class OperatorsSpec extends SparkSpec {
 
@@ -4085,7 +4086,7 @@ class OperatorsSpec extends SparkSpec {
   test("q298 wavelet synopsis satisfies Parseval: grid energy equals " +
     "DC + kept + dropped coefficient energy") {
     val dir = "/root/testdata/sf0.001"
-    val (_, freqs) = SparkEntry.orderGridFreqs(spark, dir)
+    val (_, freqs) = SparkHelpers.orderGridFreqs(spark, dir)
     val fs = freqs.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val sumF2 = (1 to 32).map(t => { val f = fs.getOrElse(t, 0L).toDouble
       f * f }).sum
@@ -4583,7 +4584,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("rboWeights (q290): identical top-10 lists sum to 1 - p^10; " +
     "weights strictly decrease in first-covered depth") {
-    val w = SparkEntry.rboWeights.map { case (m, c) => m -> c.toDouble }
+    val w = SparkHelpers.rboWeights.map { case (m, c) => m -> c.toDouble }
     assert(w.map(_._1) == (1 to 10))
     val full = w.map(_._2).sum
     assert(math.abs(full - (1.0 - math.pow(0.9, 10))) < 1e-9,
@@ -4596,7 +4597,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("shapleyCoalitions (q264): 8 coalitions per player, weights sum " +
     "to 1 per player, with-mask = without-mask | player bit") {
-    val cs = SparkEntry.shapleyCoalitionsForTest
+    val cs = SparkHelpers.shapleyCoalitions
     assert(cs.size == 32)
     for (g <- 0 until 4) {
       val mine = cs.filter(_._1 == g)
@@ -4873,7 +4874,7 @@ class OperatorsSpec extends SparkSpec {
     // tweak that silently dropped it under the dense limit would
     // un-exercise the representation the query documents)
     val dictShape = graft.functions
-      .BlocklistHits(textLit, patsLit(SparkEntry.dictBlocklistPatterns))
+      .BlocklistHits(textLit, patsLit(SparkHelpers.dictBlocklistPatterns))
       .automatonShape
     assert(!dictShape._3
       && dictShape._1 > graft.functions.BlocklistHits.denseNodeLimit,

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.functions._
 
 /** Round-14 optimization pins: every structural rewrite this round ships
@@ -28,10 +30,17 @@ class R14Spec extends SparkSpec {
       (Map("x" -> 2L), Map("y" -> 9L)),
       (Map.empty[String, Long], Map("a" -> 1L)),
       (Map("a" -> 4L), Map("a" -> 4L)),
-      // long sorted maps exercising the two-pointer advance
-      ((1 to 40).map(i => f"t$i%03d" -> i.toLong).toMap,
-        (20 to 60).map(i => f"t$i%03d" -> (i * 2).toLong).toMap)
+      // long sorted maps exercising the two-pointer advance: ListMap keeps
+      // the sorted entry order through the encoder (toMap scrambles it,
+      // which only ever reached the quadratic fallback)
+      (ListMap((1 to 40).map(i => f"t$i%03d" -> i.toLong): _*),
+        ListMap((20 to 60).map(i => f"t$i%03d" -> (i * 2).toLong): _*))
     ).toDF("ma", "mb")
+    // the long case really is sorted once encoded, so it takes the merge
+    val longKeys = rows.select(map_keys(col("ma")), map_keys(col("mb")))
+      .collect().last
+    for (ks <- Seq(longKeys.getSeq[String](0), longKeys.getSeq[String](1)))
+      assert(ks.size > 20 && ks == ks.sorted, ks.toString)
     val hof = aggregate(
       map_values(map_zip_with(col("ma"), col("mb"),
         (_, va, vb) => when(va.isNull || vb.isNull, lit(0L))
@@ -133,5 +142,13 @@ class R14Spec extends SparkSpec {
         .as[(Int, Int, Int, Long, Double)].collect().toSeq
       assert(got == ref, s"g=$g k=$k\ngot $got\nref $ref")
     }
+  }
+
+  test("vOptimalDp rejects duplicate t values instead of keeping the last") {
+    val freqs = Seq(1 -> 10L, 2 -> 5L, 2 -> 7L, 3 -> 1L).toDF("t", "f")
+    val e = intercept[IllegalArgumentException](
+      operators.Stats.vOptimalDp(freqs, 3, 2))
+    assert(e.getMessage.contains("duplicate t values in freqs (2)"),
+      e.getMessage)
   }
 }

@@ -2,7 +2,11 @@ package graft.service
 
 import java.time.{Duration, Instant}
 
-import org.apache.spark.sql.SparkSession
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.schema.{ExportSchema, Field}
 import graft.sinks.{CsvStage, Storage, StorageSyncPoint, Warehouse}
@@ -81,6 +85,10 @@ final case class WaitFor(d: Duration) extends StepResult
   * one-select transform -> CSV/JSON staging -> warehouse load (idempotent
   * partition overwrite) -> sync-point commit.
   *
+  * Each bundle is decoded once: the staging write is the only Spark action
+  * on the fetched export, and the bundle's row count is observed by that
+  * write job (`Dataset.observe`), not by a second scan.
+  *
   * The load-then-checkpoint ordering plus [[Warehouse.removeOrphanedRecords]]
   * at startup reproduces the exactly-once recovery invariant
   * (reference: internal/service.go:147-154; SURVEY.md §2.8 T4/T5).
@@ -140,32 +148,44 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
       if (exportId.isEmpty) Thread.sleep(pollInterval.toMillis)
     }
 
-    // Fetch + transform + stage (reference: internal/service.go:317-351)
-    val raw = source.getExport(exportId.get)
+    // Fetch + transform + stage (reference: internal/service.go:317-351);
+    // the staging write is the one job that decodes the bundle
+    val id = exportId.get
     val bundleName = s"${start.getEpochSecond}"
-    val (ref, records) =
-      if (config.saveAsJson) {
-        val r = CsvStage.writeBundleJson(raw, storage, s"$bundleName.json")
-        (r, raw.count())
-      } else {
-        val staged = ExportTransform.toStagedStrings(raw, schema, valueFormat)
-        val r = CsvStage.writeBundleCsv(staged, storage, s"$bundleName.csv")
-        (r, staged.count())
-      }
+    try {
+      val raw = source.getExport(id)
+      val rows = Observation()
+      val ref =
+        if (config.saveAsJson)
+          CsvStage.writeBundleJson(raw.observe(rows, count(lit(1))), storage,
+            s"$bundleName.json")
+        else CsvStage.writeBundleCsv(
+          ExportTransform.toStagedStrings(raw, schema, valueFormat)
+            .observe(rows, count(lit(1))),
+          storage, s"$bundleName.csv")
+      val records = observed(rows)
 
-    // Load + commit; sync point saved strictly AFTER the load so a crash
-    // between the two is healed by removeOrphanedRecords on restart
-    // (reference: internal/service.go:121-156, crash comment :147-150).
-    if (config.storageOnly) {
-      StorageSyncPoint.write(storage, end)
-    } else warehouse.foreach { wh =>
-      val truncateDay = isDayStart(start)
-      wh.loadToWarehouse(ref, start, truncateDay)
-      wh.saveSyncPoint(end)
-      storage.deleteFile(s"$bundleName.csv") // staged-file cleanup (K9)
-    }
-    BundleProcessed(start, end, records, ref)
+      // Load + commit; sync point saved strictly AFTER the load so a crash
+      // between the two is healed by removeOrphanedRecords on restart
+      // (reference: internal/service.go:121-156, crash comment :147-150).
+      if (config.storageOnly) {
+        StorageSyncPoint.write(storage, end)
+      } else warehouse.foreach { wh =>
+        val truncateDay = isDayStart(start)
+        wh.loadToWarehouse(ref, start, truncateDay)
+        wh.saveSyncPoint(end)
+        storage.deleteFile(s"$bundleName.csv") // staged-file cleanup (K9)
+      }
+      BundleProcessed(start, end, records, ref)
+    } finally source.release(id) // a retry fetches the window anew
   }
+
+  /** The count a write job observed. Observed metrics arrive through the
+    * listener bus after the job ends; the wait is bounded so an event the
+    * bus dropped fails the bundle, which is retried, instead of hanging
+    * the loop. */
+  private def observed(rows: Observation): Long =
+    Await.result(rows.future, 5.minutes).getLong(0)
 
   private def isDayStart(t: Instant): Boolean =
     t.getEpochSecond % 86400 == 0

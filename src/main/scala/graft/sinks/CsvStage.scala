@@ -37,7 +37,10 @@ object CsvStage {
       .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
     val dest = new Path(storage.getFileReference(name))
     fs.delete(dest, false)
-    fs.rename(part, dest)
+    // the destination is already gone: a failed rename must fail the
+    // bundle here, not surface as a missing file at load
+    if (!fs.rename(part, dest))
+      throw new java.io.IOException(s"could not rename $part to $dest")
     fs.delete(tmpPath, true)
     dest.toString
   }

@@ -2,6 +2,8 @@ package graft.sinks
 
 import java.time.{Instant, ZoneOffset}
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -158,12 +160,23 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
       .write.mode(SaveMode.Append).parquet(syncPath)
   }
 
-  /** Max EventStart in the live table (reference: redshift.go:342). The
-    * staged strings use Go's zero-trimmed RFC3339, which is not
-    * lexicographically time-ordered — parse before comparing. */
-  def maxEventStart(): Option[Instant] = {
+  /** The table from `syncPoint`'s day partition on: every row past the
+    * sync point is there, since committed bundles ended by it and a later
+    * bundle loads into its own start day or a later one. */
+  def readFrom(syncPoint: Instant): DataFrame =
+    readTable().filter(col("day") >= dayOf(syncPoint))
+
+  /** Max EventStart from the sync point's day on (reference:
+    * redshift.go:342), so the check reads the partitions the heal can
+    * touch, not the whole table. The staged strings use Go's zero-trimmed
+    * RFC3339, which is not lexicographically time-ordered — parse before
+    * comparing. */
+  def maxEventStart(syncPoint: Instant): Option[Instant] = {
+    // no partition in scope (a daily loop's usual case): no Spark job
+    val day = dayOf(syncPoint)
+    if (!dayPartitions().exists(_._1 >= day)) return None
     try {
-      val row = readTable()
+      val row = readFrom(syncPoint)
         .agg(max(to_timestamp(col("EventStart"))).as("m")).collect()(0)
       Option(row.getAs[java.sql.Timestamp]("m")).map(_.toInstant)
     } catch { case _: Exception => None }
@@ -178,22 +191,26 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
   def expirePartitions(retentionDays: Int, asOf: Instant): Int = {
     val cutoff = asOf.atOffset(ZoneOffset.UTC).toLocalDate
       .minusDays(retentionDays).toString
-    val base = new org.apache.hadoop.fs.Path(dataPath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return 0
-    val expired = fs.listStatus(base)
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter { p =>
-        p.getName.startsWith("day=") &&
-          p.getName.stripPrefix("day=") < cutoff
-      }
-    expired.foreach(p => fs.delete(p, true))
+    val expired = dayPartitions().filter(_._1 < cutoff)
+    expired.foreach { case (_, p) => dataFs.delete(p, true) }
     expired.length
   }
 
+  private def dataFs: FileSystem =
+    new Path(dataPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The table's day partitions, (yyyy-MM-dd, directory), from a listing
+    * of its directory: no Spark job. */
+  private def dayPartitions(): Seq[(String, Path)] = {
+    val base = new Path(dataPath)
+    if (!dataFs.exists(base)) Seq.empty
+    else dataFs.listStatus(base).toSeq.filter(_.isDirectory).map(_.getPath)
+      .filter(_.getName.startsWith("day="))
+      .map(p => p.getName.stripPrefix("day=") -> p)
+  }
+
   override def removeOrphanedRecords(syncPoint: Instant): Unit = {
-    val orphaned = maxEventStart().exists(_.isAfter(syncPoint))
+    val orphaned = maxEventStart(syncPoint).exists(_.isAfter(syncPoint))
     if (orphaned) {
       // Redshift-flavor healing: partition-scoped DELETE WHERE. The
       // BigQuery flavor ([[BigQueryParquetWarehouse]]) instead rewinds the
@@ -201,24 +218,17 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
       // Rewrite only the affected day partitions, keeping rows at or
       // before the sync point — a partition-scoped DELETE WHERE
       // (reference: redshift.go:284-294; Spark-native per SURVEY.md §2.5).
-      val day = dayOf(syncPoint)
       // Materialize survivors (localCheckpoint — Spark won't overwrite a
       // path it is reading from), drop the affected partition directories,
       // append survivors back. A dynamic partition overwrite alone cannot
       // EMPTY a partition: writing zero rows replaces nothing.
-      val affectedDays = readTable().filter(col("day") >= day)
-        .select(col("day").cast("string")) // partition col reads as DateType
-        .distinct().collect().map(_.getString(0))
-      val healed = readTable()
-        .filter(col("day") >= day)
+      val day = dayOf(syncPoint)
+      val affected = dayPartitions().filter(_._1 >= day)
+      val healed = readFrom(syncPoint)
         .filter(to_timestamp(col("EventStart")) <= lit(syncPoint.toString)
           .cast("timestamp"))
         .localCheckpoint(true)
-      val base = new org.apache.hadoop.fs.Path(dataPath)
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      affectedDays.foreach { d =>
-        fs.delete(new org.apache.hadoop.fs.Path(base, s"day=$d"), true)
-      }
+      affected.foreach { case (_, p) => dataFs.delete(p, true) }
       healed.write.mode(SaveMode.Append).partitionBy("day").parquet(dataPath)
     }
   }
@@ -243,7 +253,7 @@ class BigQueryParquetWarehouse(spark: SparkSession, tablePath: String)
 
   override def lastSyncPoint(): Option[Instant] =
     super.lastSyncPoint().map { t =>
-      if (!maxEventStart().exists(_.isAfter(t))) t
+      if (!maxEventStart(t).exists(_.isAfter(t))) t
       else {
         // leftover data past the sync point: rewind to the first instant
         // of its day; the day's first reloaded bundle truncates the

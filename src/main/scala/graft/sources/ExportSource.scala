@@ -25,6 +25,11 @@ trait DataExportSource {
     * (reference: client/export.go:102-134 returns a gzipped JSON stream;
     * here the decompress+decode collapses into the reader). */
   def getExport(exportId: String): DataFrame
+
+  /** Free what `getExport(exportId)` holds, e.g. a staged download. Called
+    * once the export's bundle is committed (or has failed; a retry fetches
+    * the window anew), after the last action on its frame. */
+  def release(exportId: String): Unit = ()
 }
 
 /** Local fixture-backed source with the exact semantics of the reference's

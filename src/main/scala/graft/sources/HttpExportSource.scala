@@ -145,9 +145,13 @@ class HttpExportClient(
   * the scan. The wire bundle is gzipped JSON (FORMAT_JSON; the reference
   * decompresses by Content-Encoding, client/export.go download) — the
   * staged object keeps the wire bytes and the reader gunzips by extension,
-  * sniffed from the gzip magic so plain-JSON servers also work. */
+  * sniffed from the gzip magic so plain-JSON servers also work. The staged
+  * object is deleted when the service releases the export. */
 class HttpExportSource(spark: SparkSession, client: HttpExportClient,
                        stagingDir: String) extends DataExportSource {
+
+  /** Downloads not yet released, by export id. */
+  private val staged = scala.collection.concurrent.TrieMap[String, Path]()
 
   override def createExport(start: Instant, end: Instant,
                             fields: Seq[String]): String =
@@ -164,6 +168,7 @@ class HttpExportSource(spark: SparkSession, client: HttpExportClient,
     val gzipped = m1 == 0x1f && m2 == 0x8b
     val ext = if (gzipped) "json.gz" else "json"
     val dest = new Path(s"$stagingDir/$exportId.$ext")
+    staged.put(exportId, dest)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(dest, true)
     try {
@@ -173,4 +178,9 @@ class HttpExportSource(spark: SparkSession, client: HttpExportClient,
     } finally { in.close(); out.close() }
     spark.read.format("graft-export").load(dest.toString)
   }
+
+  override def release(exportId: String): Unit =
+    staged.remove(exportId).foreach { p =>
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+    }
 }

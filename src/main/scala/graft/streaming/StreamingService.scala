@@ -91,20 +91,25 @@ object StreamingService {
         // one staged CSV + bulk load per day in the batch, through the
         // same Warehouse path as the batch loop (bundleStart = day start
         // places rows in their day partition; appends-then-commit keeps
-        // the orphan-healing contract on crash)
-        val days = batch
-          .select(to_date(to_timestamp(col("EventStart"))).cast("string")
-            .as("d"))
-          .where(col("d").isNotNull).distinct().collect().map(_.getString(0))
-        days.sorted.foreach { day =>
-          val dayRows = batch.filter(
-            to_date(to_timestamp(col("EventStart"))) === lit(day))
-          val name = s"stream_${id}_$day.csv"
-          val ref = CsvStage.writeBundleCsv(dayRows, storage, name)
-          warehouse.loadToWarehouse(ref, Instant.parse(s"${day}T00:00:00Z"),
-            truncateDay = false)
-          storage.deleteFile(name) // staged-file cleanup (K9)
-        }
+        // the orphan-healing contract on crash). The batch is persisted so
+        // the day list and every day's write read one decode of it.
+        batch.persist()
+        try {
+          val days = batch
+            .select(to_date(to_timestamp(col("EventStart"))).cast("string")
+              .as("d"))
+            .where(col("d").isNotNull).distinct().collect()
+            .map(_.getString(0))
+          days.sorted.foreach { day =>
+            val dayRows = batch.filter(
+              to_date(to_timestamp(col("EventStart"))) === lit(day))
+            val name = s"stream_${id}_$day.csv"
+            val ref = CsvStage.writeBundleCsv(dayRows, storage, name)
+            warehouse.loadToWarehouse(ref,
+              Instant.parse(s"${day}T00:00:00Z"), truncateDay = false)
+            storage.deleteFile(name) // staged-file cleanup (K9)
+          }
+        } finally batch.unpersist()
       }
       .start()
     query.awaitTermination()

@@ -2,10 +2,11 @@ package graft.transform
 
 import java.time.{Duration, Instant}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Sanitize
 import graft.schema.{ExportSchema, Field}
 
 /** Per-sink value rendering strategy (reference: warehouse/warehouse.go:54-71
@@ -20,9 +21,11 @@ sealed trait ValueFormat {
 object ValueFormat {
 
   /** Strip newline/CR to space and drop NUL bytes
-    * (reference: warehouse/warehouse.go:66-69). */
+    * (reference: warehouse/warehouse.go:66-69), through the one-scan
+    * native [[graft.functions.Sanitize]]; the column needs nothing
+    * registered on the session that runs it. */
   def sanitize(c: Column): Column =
-    regexp_replace(regexp_replace(c, "[\n\r]", " "), "\u0000", "")
+    GraftColumns.column(Sanitize(GraftColumns.expression(c)))
 
   /** RFC3339 with microsecond precision and Go's trailing-zero trim:
     * `2020-08-27T06:20:26.900000Z` renders as `2020-08-27T06:20:26.9Z`, and

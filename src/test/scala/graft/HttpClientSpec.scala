@@ -269,9 +269,10 @@ class HttpClientSpec extends SparkSpec {
       assert(wh.readTable().count() == 3)
       assert(wh.lastSyncPoint()
         .contains(Instant.parse("2020-08-31T00:00:00Z")))
-      // the staged wire bundles were gzip (sniffed) and served through the
-      // DSv2 reader
-      assert(Files.list(tmp.resolve("staging")).iterator().hasNext)
+      // every bundle's wire download was staged for the DSv2 reader, and
+      // deleted once its bundle committed: nothing is left behind
+      assert(stub.requests.count(_._2.startsWith("/dl/")) == 4)
+      assert(!Files.list(tmp.resolve("staging")).iterator().hasNext)
     } finally stub.stop()
   }
 }

@@ -3,9 +3,13 @@ package graft
 import java.nio.file.{Files, Path}
 import java.time.{Duration, Instant}
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
-import graft.service.{BundleProcessed, ExportService, RetryPolicy, ServiceConfig}
+import graft.service.{BundleProcessed, ExportService, RetryPolicy, ServiceConfig, WaitFor}
 import graft.sinks.{HadoopStorage, ParquetWarehouse, StorageSyncPoint}
 import graft.sources.LocalFixtureSource
 
@@ -78,6 +82,73 @@ class ServiceSpec extends SparkSpec {
     val emptyBundle = bundles.find(
       _.start == Instant.parse("2020-08-30T00:00:00Z"))
     assert(emptyBundle.exists(_.records == 0))
+  }
+
+  test("each bundle is decoded once: one SQL execution per processNext scans the export") {
+    for (json <- Seq(false, true)) {
+      val tmp = Files.createTempDirectory("graft-e2e-scans")
+      val (svc, _, _) = newService(tmp, storageOnly = json, saveAsJson = json)
+      val fixture = tmp.resolve("raw.json").toString
+      val scans = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart
+              if s.physicalPlanDescription.contains(fixture) =>
+            scans.incrementAndGet()
+          case _ =>
+        }
+      }
+      val sc = spark.sparkContext
+      svc.init()
+      svc.recover()
+      sc.addSparkListener(listener)
+      try {
+        val perBundle = Iterator.continually {
+          scans.set(0)
+          val step = svc.processNext()
+          ListenerBusDrain(sc)
+          (step, scans.get())
+        }.takeWhile(!_._1.isInstanceOf[WaitFor]).toSeq
+        assert(perBundle.map(_._2) == Seq(1, 1, 1, 1), s"saveAsJson=$json")
+        // the counts come from the write job; the 08-30 window is empty
+        assert(perBundle.map(_._1.asInstanceOf[BundleProcessed].records) ==
+          Seq(2L, 2L, 2L, 0L), s"saveAsJson=$json")
+      } finally sc.removeSparkListener(listener)
+    }
+  }
+
+  test("the orphan check reads only the partitions from the sync point's day") {
+    val tmp = Files.createTempDirectory("graft-e2e-scope")
+    val (svc, _, Some(wh)) = newService(tmp): @unchecked
+    svc.runUntilCaughtUp()
+    val sync = Instant.parse("2020-08-29T00:00:00Z")
+    val scan = wh.readFrom(sync).queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s
+    }.get
+    assert(scan.partitionFilters.exists(_.references.exists(_.name == "day")))
+    assert(wh.readFrom(sync).select(col("day").cast("string")).distinct()
+      .collect().map(_.getString(0)).toSeq == Seq("2020-08-29"))
+    assert(wh.maxEventStart(sync)
+      .contains(Instant.parse("2020-08-29T18:00:00Z")))
+    // nothing loaded from the last sync point's day on
+    assert(wh.maxEventStart(Instant.parse("2020-08-31T00:00:00Z")).isEmpty)
+  }
+
+  test("a staging rename that returns false fails the bundle write") {
+    val tmp = Files.createTempDirectory("graft-e2e-rename")
+    val sc = spark.sparkContext
+    sc.hadoopConfiguration.set("fs.renamefail.impl",
+      classOf[RenameFailingFs].getName)
+    val storage = new HadoopStorage(s"renamefail://${tmp.resolve("stage")}",
+      sc.hadoopConfiguration)
+    val df = ExportSchemaRow.blankRow(spark, Seq("a", "b"), "a" -> "1")
+    val e = intercept[java.io.IOException] {
+      graft.sinks.CsvStage.writeBundleCsv(df, storage, "b.blocked")
+    }
+    assert(e.getMessage.contains("could not rename"))
+    // the same write to a name the file system renames is staged
+    val ref = graft.sinks.CsvStage.writeBundleCsv(df, storage, "b.csv")
+    assert(storage.readContent("b.csv").exists(_.startsWith("a,b")), ref)
   }
 
   test("storage-only + SaveAsJson: raw JSON bundles, file sync point") {
@@ -414,4 +485,13 @@ object ExportSchemaRow {
         org.apache.spark.sql.types.StructField(c,
           org.apache.spark.sql.types.StringType))))
   }
+}
+
+/** Local file system under the `renamefail` scheme whose rename to a
+  * `*.blocked` name returns false, the way object-store renames can fail. */
+class RenameFailingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("renamefail:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    !dst.getName.endsWith(".blocked") && super.rename(src, dst)
 }

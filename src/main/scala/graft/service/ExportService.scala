@@ -190,10 +190,10 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
   private def isDayStart(t: Instant): Boolean =
     t.getEpochSecond % 86400 == 0
 
-  /** Crash recovery before the first bundle (reference: SURVEY.md §3.3):
-    * heal any rows loaded past the committed sync point. */
+  /** Crash recovery before the first bundle and each retry (reference:
+    * SURVEY.md §3.3): heal rows loaded past the sync point, or StartTime. */
   def recover(): Unit = warehouse.foreach { wh =>
-    lastSyncPoint().foreach(wh.removeOrphanedRecords)
+    wh.removeOrphanedRecords(lastSyncPoint().getOrElse(config.startTime))
   }
 
   /** Run until caught up: process windows until the watermark gate says
@@ -208,6 +208,7 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
     var continue = true
     while (continue && out.size < maxBundles) {
       try {
+        if (step > 0) recover()
         processNext() match {
           case b: BundleProcessed => out += b; step = 0
           case WaitFor(_) => continue = false

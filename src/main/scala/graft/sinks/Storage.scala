@@ -3,7 +3,7 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
 
 /** Object-storage abstraction, mirroring the reference's `Storage`
   * interface (reference: warehouse/warehouse.go:28-41). One Hadoop-FS
@@ -29,10 +29,24 @@ class HadoopStorage(baseUri: String,
   private def pathOf(name: String) = new Path(s"$baseUri/$name")
   private def fs(p: Path): FileSystem = p.getFileSystem(hadoopConf)
 
+  /** Writes a temp object and renames it over `name`, so a reader sees
+    * the old content or the new, never a partial object or none. Local
+    * files skip the checksum layer, whose rename takes two steps. */
   override def saveContent(name: String, content: String): String = {
     val p = pathOf(name)
-    val out = fs(p).create(p, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    val (f, crc) = fs(p) match {
+      case c: ChecksumFileSystem => (c.getRawFileSystem, Some(c.getChecksumFile(p)))
+      case other => (other, None)
+    }
+    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
+    try {
+      val out = f.create(tmp, true)
+      try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
+      crc.foreach(f.delete(_, false))
+      // rename(2) replaces atomically; HDFS refuses an existing target
+      if (!f.rename(tmp, p)) FileContext.getFileContext(f.getUri, hadoopConf)
+        .rename(tmp, p, Options.Rename.OVERWRITE)
+    } finally f.delete(tmp, false)
     getFileReference(name)
   }
 

@@ -11,8 +11,8 @@ import graft.schema.{ExportSchema, Field}
 
 /** Warehouse-database abstraction, mirroring the reference's `Database`
   * interface (reference: warehouse/warehouse.go:43-52): export-table DDL +
-  * schema evolution, bulk load from a staged object, sync-point log, and
-  * crash-recovery healing.
+  * schema evolution, bulk load from a staged object, the committed sync
+  * point, and crash-recovery healing.
   */
 trait Warehouse {
   /** Create the export table if missing; true if created
@@ -29,7 +29,7 @@ trait Warehouse {
     * (reference: bigquery.go:130-161). */
   def loadToWarehouse(csvRef: String, bundleStart: Instant,
                       truncateDay: Boolean): Unit
-  /** Checkpoint log (reference: redshift.go:266-328, bigquery.go:59-128). */
+  /** Committed sync point (reference: redshift.go:266-328, bigquery.go:59-128). */
   def lastSyncPoint(): Option[Instant]
   def saveSyncPoint(bundleEnd: Instant): Unit
   /** Exactly-once healing: remove rows loaded after the last committed
@@ -40,9 +40,9 @@ trait Warehouse {
 
 /** Day-partitioned parquet warehouse — the Spark-native analog of the
   * BigQuery date-partitioned export table (reference: bigquery.go:142-151,
-  * 213-226). Loads are idempotent dynamic partition overwrites, which is
-  * the Spark-native exactly-once strategy (SURVEY.md §7.4 trap 1): a
-  * replayed bundle replaces, never duplicates.
+  * 213-226). The first bundle of a day replaces the day partition
+  * (BigQuery's WriteTruncate); later bundles append, and the sync point
+  * with orphan healing keeps them exactly-once.
   *
   * Live column order is tracked in a `_columns.json` metadata object
   * (the information_schema analog); data files never rewrite on schema
@@ -52,13 +52,10 @@ trait Warehouse {
 class ParquetWarehouse(spark: SparkSession, tablePath: String)
     extends Warehouse {
 
-  private val storage: Storage = new HadoopStorage(tablePath)
+  private val storage: Storage =
+    new HadoopStorage(tablePath, spark.sparkContext.hadoopConfiguration)
   private val ColumnsMeta = "_columns.json"
-  private val SyncTable = "_sync"
   private val dataPath = s"$tablePath/data"
-  protected val syncPath = s"$tablePath/$SyncTable"
-
-  spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
   private def dayOf(t: Instant): String =
     t.atOffset(ZoneOffset.UTC).toLocalDate.toString
@@ -135,30 +132,26 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
         .as(c)): _*)
       .na.fill("", cols.toArray)
       .withColumn("day", lit(dayOf(bundleStart)))
-    val mode = if (truncateDay) SaveMode.Overwrite else SaveMode.Append
-    aligned.write.mode(mode).partitionBy("day").parquet(dataPath)
+    // WriteTruncate, also of an empty bundle (an overwrite of no rows would not)
+    if (truncateDay) dataFs.delete(new Path(s"$dataPath/day=${dayOf(bundleStart)}"), true)
+    aligned.write.mode(SaveMode.Append).partitionBy("day").parquet(dataPath)
   }
 
   def readTable(): DataFrame = spark.read.parquet(dataPath)
 
+  /** One [[StorageSyncPoint]] object, as in storage-only mode, replaced
+    * atomically (no Spark job). One that cannot be read fails, and so does
+    * an older version's `_sync` table: restarting from StartTime reloads. */
   override def lastSyncPoint(): Option[Instant] = {
-    if (!new java.io.File(syncPath).exists() &&
-        !storage.exists(SyncTable)) return None
-    try {
-      val row = spark.read.parquet(syncPath)
-        .agg(max(col("BundleEndTime")).as("m")).collect()(0)
-      Option(row.getAs[java.sql.Timestamp]("m")).map(_.toInstant)
-    } catch { case _: Exception => None }
+    val t = StorageSyncPoint.read(storage)
+    if (t.isEmpty && storage.exists("_sync")) throw new IllegalStateException(
+      s"${storage.getFileReference("_sync")} is an older sync-point table; " +
+        s"write its last BundleEndTime to ${StorageSyncPoint.SyncFileName}")
+    t
   }
 
-  override def saveSyncPoint(bundleEnd: Instant): Unit = {
-    import spark.implicits._
-    // (ID=-1, Processed=now, BundleEndTime) — reference: redshift.go:275-276
-    Seq((-1L, java.sql.Timestamp.from(Instant.now()),
-        java.sql.Timestamp.from(bundleEnd)))
-      .toDF("ID", "Processed", "BundleEndTime")
-      .write.mode(SaveMode.Append).parquet(syncPath)
-  }
+  override def saveSyncPoint(bundleEnd: Instant): Unit =
+    StorageSyncPoint.write(storage, bundleEnd)
 
   /** The table from `syncPoint`'s day partition on: every row past the
     * sync point is there, since committed bundles ended by it and a later
@@ -168,19 +161,19 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
 
   /** Max EventStart from the sync point's day on (reference:
     * redshift.go:342), so the check reads the partitions the heal can
-    * touch, not the whole table. The staged strings use Go's zero-trimmed
-    * RFC3339, which is not lexicographically time-ordered — parse before
-    * comparing. */
+    * touch, not the whole table. Rows whose EventStart does not parse
+    * (a record without one is staged as "") are left out. */
   def maxEventStart(syncPoint: Instant): Option[Instant] = {
     // no partition in scope (a daily loop's usual case): no Spark job
     val day = dayOf(syncPoint)
     if (!dayPartitions().exists(_._1 >= day)) return None
-    try {
-      val row = readFrom(syncPoint)
-        .agg(max(to_timestamp(col("EventStart"))).as("m")).collect()(0)
-      Option(row.getAs[java.sql.Timestamp]("m")).map(_.toInstant)
-    } catch { case _: Exception => None }
+    val row = readFrom(syncPoint).agg(max(eventTime).as("m")).collect()(0)
+    Option(row.getAs[java.sql.Timestamp]("m")).map(_.toInstant)
   }
+
+  /** Go's zero-trimmed RFC3339 is not lexicographically time-ordered, so
+    * parse before comparing; NULL where it does not parse. */
+  private def eventTime = try_to_timestamp(col("EventStart"))
 
   /** Partition-expiration TTL: drop day partitions older than
     * `retentionDays` relative to `asOf` — the maintenance-job analog of
@@ -216,7 +209,8 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
       // BigQuery flavor ([[BigQueryParquetWarehouse]]) instead rewinds the
       // sync point and truncates on reload.
       // Rewrite only the affected day partitions, keeping rows at or
-      // before the sync point — a partition-scoped DELETE WHERE
+      // before the sync point and, like the reference's DELETE, NULLs — a
+      // partition-scoped DELETE WHERE
       // (reference: redshift.go:284-294; Spark-native per SURVEY.md §2.5).
       // Materialize survivors (localCheckpoint — Spark won't overwrite a
       // path it is reading from), drop the affected partition directories,
@@ -225,8 +219,8 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
       val day = dayOf(syncPoint)
       val affected = dayPartitions().filter(_._1 >= day)
       val healed = readFrom(syncPoint)
-        .filter(to_timestamp(col("EventStart")) <= lit(syncPoint.toString)
-          .cast("timestamp"))
+        .filter(eventTime.isNull ||
+          eventTime <= lit(syncPoint.toString).cast("timestamp"))
         .localCheckpoint(true)
       affected.foreach { case (_, p) => dataFs.delete(p, true) }
       healed.write.mode(SaveMode.Append).partitionBy("day").parquet(dataPath)
@@ -238,12 +232,12 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
   * the reference's second exactly-once strategy, executable
   * (reference: warehouse/bigquery.go:82-104 day-rewind LastSyncPoint,
   * :147-151 WriteTruncate on the first bundle of the day, :392-405
-  * removeSyncPointsAfter).
+  * sync-row removal).
   *
   * Partitioned tables take no row-wise DELETE, so when leftover records
   * are found past the committed sync point (a load that crashed before
   * its sync write), recovery REWINDS the sync point to the start of that
-  * day and removes later sync rows; the service then re-exports from the
+  * day and commits the rewound point; the service then re-exports from the
   * day boundary and the first bundle of the day loads with
   * WriteTruncate ([[ParquetWarehouse.loadToWarehouse]] `truncateDay`),
   * replacing the partition — cleanup happens on load, not at recovery
@@ -259,19 +253,10 @@ class BigQueryParquetWarehouse(spark: SparkSession, tablePath: String)
         // of its day; the day's first reloaded bundle truncates the
         // partition (reference: bigquery.go:95-103)
         val dayStart = t.truncatedTo(java.time.temporal.ChronoUnit.DAYS)
-        removeSyncPointsAfter(dayStart)
+        saveSyncPoint(dayStart)
         dayStart
       }
     }
-
-  /** Drop sync rows past the rewound point
-    * (reference: bigquery.go:392-405). */
-  private def removeSyncPointsAfter(t: Instant): Unit = {
-    val survivors = spark.read.parquet(syncPath)
-      .filter(col("BundleEndTime") <= lit(java.sql.Timestamp.from(t)))
-      .localCheckpoint(true) // Spark won't overwrite a path it reads from
-    survivors.write.mode(SaveMode.Overwrite).parquet(syncPath)
-  }
 
   /** Cleanup occurs on load (WriteTruncate), never as a DELETE. */
   override def removeOrphanedRecords(syncPoint: Instant): Unit = ()

@@ -149,12 +149,10 @@ object EventStream {
     * (T5). A plain mode("append") here would double rows on every
     * replay. */
   def upsertBatch(batch: DataFrame, batchId: Long, outPath: String): Unit = {
-    batch.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     batch.withColumn("day", to_date(col("window_start")))
       .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("day", "batch_id")
-      .parquet(outPath)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day", "batch_id").parquet(outPath)
   }
 
   /** Micro-batch sink into a warehouse-style partitioned parquet table:

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.service.{ConfigLoader, ExportService}
 import graft.sinks.{HadoopStorage, JdbcWarehouse, ParquetWarehouse}
-import graft.sources.{Dsv2ExportSource, HttpExportClient, HttpExportSource, LocalFixtureSource}
+import graft.sources.{HttpExportClient, HttpExportSource, LocalFixtureSource}
 
 /** CLI entry point — the reference's main.go:18-39 lifecycle: load config,
   * wire provider (source/storage/warehouse per core/core.go:18-51), run the
@@ -15,11 +15,12 @@ import graft.sources.{Dsv2ExportSource, HttpExportClient, HttpExportSource, Loca
   * Usage: runMain graft.Main <config-file>
   * Config keys beyond ServiceConfig (see ConfigLoader): FixturePath (raw
   * export JSON), StageDir (staging storage), WarehouseDir (omit with
-  * StorageOnly), Source = "fixture" | "dsv2" | "http" (live client: ApiURL
+  * StorageOnly), Source = "fixture" | "http" (live client: ApiURL
   * + FsApiToken, the latter falling back to the FS_API_TOKEN environment
-  * variable like the reference, config/config.go:152-155), and
-  * WarehouseJdbcUrl to load through the JDBC warehouse instead of the
-  * parquet one.
+  * variable like the reference, config/config.go:152-155),
+  * Mode = "batch" | "streaming", and WarehouseJdbcUrl to load through the
+  * JDBC warehouse instead of the parquet one. Any other Source or Mode
+  * value is rejected.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -30,6 +31,15 @@ object Main {
     val kv = ConfigLoader.parseDoc(text)
     def need(k: String) = kv.getOrElse(k,
       throw new IllegalArgumentException(s"missing config key $k"))
+    // the first accepted value is the default
+    def oneOf(k: String, accepted: String*): String = {
+      val v = kv.getOrElse(k, accepted.head)
+      require(accepted.contains(v),
+        s"""unknown $k "$v"; accepted: ${accepted.mkString(", ")}""")
+      v
+    }
+    val sourceKind = oneOf("Source", "fixture", "http")
+    val mode = oneOf("Mode", "batch", "streaming")
 
     // embedding-safe: getOrCreate may hand us a caller's session — only
     // stop what this main itself created
@@ -37,8 +47,7 @@ object Main {
       .orElse(SparkSession.getDefaultSession).isDefined
     val spark = GraftSession.create("graft")
 
-    val source = kv.getOrElse("Source", "fixture") match {
-      case "dsv2" => new Dsv2ExportSource(spark, need("FixturePath"))
+    val source = sourceKind match {
       case "http" =>
         val token = kv.get("FsApiToken").orElse(sys.env.get("FS_API_TOKEN"))
           .getOrElse(throw new IllegalArgumentException(
@@ -47,7 +56,7 @@ object Main {
           new HttpExportClient(
             kv.getOrElse("ApiURL", ConfigLoader.DefaultApiUrl), token),
           need("StageDir") + "/_downloads")
-      case _ => new LocalFixtureSource(spark, need("FixturePath"))
+      case "fixture" => new LocalFixtureSource(spark, need("FixturePath"))
     }
     // provider-scoped storage timeout (reference: warehouse/s3.go:38-80
     // bounds S3 I/O with `[s3] Timeout`; the gcs section accepts the same
@@ -78,7 +87,7 @@ object Main {
     // Mode = "streaming" drains mature raw bundles through the Structured
     // Streaming front door (Trigger.AvailableNow + foreachBatch into the
     // same warehouse path) and commits the batch-equivalent sync point
-    if (kv.getOrElse("Mode", "batch") == "streaming") {
+    if (mode == "streaming") {
       val wh = warehouse.getOrElse(throw new IllegalArgumentException(
         "Mode=streaming loads a warehouse; unset StorageOnly"))
       val committed = graft.streaming.StreamingService.runAvailableNow(

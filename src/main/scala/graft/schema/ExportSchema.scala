@@ -83,12 +83,6 @@ object ExportSchema {
   def canonical(includeMobile: Boolean): Seq[Field] =
     if (includeMobile) baseFields ++ mobileFields else baseFields
 
-  /** Sync-point checkpoint table row (reference: warehouse/schema.go:91-95). */
-  val syncTableSchema: StructType = StructType(Seq(
-    StructField("ID", LongType, nullable = false),
-    StructField("Processed", TimestampType, nullable = false),
-    StructField("BundleEndTime", TimestampType, nullable = false)))
-
   /** Spark StructType of an ordered field list. Everything except
     * EventStart/EventType is nullable (reference: warehouse/bigquery.go:335-340). */
   def toStructType(fields: Seq[Field]): StructType = StructType(

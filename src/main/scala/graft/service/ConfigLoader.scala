@@ -17,7 +17,6 @@ import java.time.{Duration, Instant}
 object ConfigLoader {
 
   val DefaultApiUrl = "https://api.fullstory.com"
-  val DefaultSegmentId = "everyone"
 
   /** Go `time.ParseDuration` grammar (the reference's config durations are
     * parsed by it — config/config.go duration fields): an optional sign,

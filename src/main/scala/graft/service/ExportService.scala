@@ -157,8 +157,9 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
       val rows = Observation()
       val ref =
         if (config.saveAsJson)
-          CsvStage.writeBundleJson(raw.observe(rows, count(lit(1))), storage,
-            s"$bundleName.json")
+          CsvStage.writeBundleJson(
+            ExportTransform.toRecordJson(raw).observe(rows, count(lit(1))),
+            storage, s"$bundleName.json")
         else CsvStage.writeBundleCsv(
           ExportTransform.toStagedStrings(raw, schema, valueFormat)
             .observe(rows, count(lit(1))),

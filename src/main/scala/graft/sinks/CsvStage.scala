@@ -48,17 +48,18 @@ object CsvStage {
   /** JSON passthrough (SaveAsJson mode): the raw export saved as one JSON
     * array object, bypassing the CSV transform
     * (reference: internal/service.go:328-335; storage-only constraint
-    * enforced by config, config/config.go:247-249).
+    * enforced by config, config/config.go:247-249). `records` holds one
+    * JSON object per row in its one string column.
     *
-    * The rows are serialized DISTRIBUTED (`df.toJSON` written as text
-    * parts); the single-array framing is a driver-side streaming
-    * concatenation of the part files — O(one line) driver memory, never a
-    * collect. */
-  def writeBundleJson(df: DataFrame, storage: Storage, name: String): String = {
-    val spark = df.sparkSession
+    * The records are written DISTRIBUTED as text parts; the single-array
+    * framing is a driver-side streaming concatenation of the part files —
+    * O(one line) driver memory, never a collect. */
+  def writeBundleJson(records: DataFrame, storage: Storage,
+                      name: String): String = {
+    val spark = records.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val tmp = storage.getFileReference(s"_tmp_$name")
-    df.toJSON.write.mode("overwrite").text(tmp)
+    records.write.mode("overwrite").text(tmp)
     val tmpPath = new Path(tmp)
     val fs = hadoopFs(tmpPath, conf)
     // part order = partition order: the writer names parts by partition id

@@ -9,6 +9,7 @@ import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -18,6 +19,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.schema.ExportSchema
 
@@ -35,8 +37,10 @@ import graft.schema.ExportSchema
   *     typed columns, everything else folds into the CustomVars JSON column
   *     (reference: internal/service.go:86-96).
   *
-  * Usage: `spark.read.format("graft-export").load(path)` where `path` holds
-  * JSON files of record arrays. One InputPartition per file; a production
+  * Usage: `spark.read.format("graft-export").load(path)` where `path` is a
+  * JSON file of one record array, or a directory of them; gzip is detected
+  * by its magic bytes, not by the name. Files are opened with the session's
+  * Hadoop configuration. One InputPartition per file; a production
   * deployment against the live API would instead emit one partition per
   * polled export window.
   */
@@ -59,7 +63,10 @@ class ExportDataSource extends TableProvider with DataSourceRegister {
 }
 
 object ExportDataSource {
-  /** The canonical typed export schema (59 fields, CustomVars last), made
+  /** The canonical typed export schema: the 59 base fields with the 8
+    * mobile-app fields before CustomVars, which stays last. The reader
+    * knows every field a bundle may carry, so a mobile field never folds
+    * into CustomVars; whether it is staged is up to the live schema. Made
     * fully nullable for the READ side: raw bundles may lack any field —
     * including EventStart/EventType, which the warehouse DDL declares
     * REQUIRED (reference: warehouse/bigquery.go:335-340) — and a scan that
@@ -67,12 +74,9 @@ object ExportDataSource {
     * allowed to emit the null. A non-nullable read schema makes Tungsten's
     * UnsafeWriter dereference the null and crash the whole scan. */
   val schema: StructType = StructType(
-    ExportSchema.toStructType(ExportSchema.baseFields)
+    ExportSchema.toStructType(ExportSchema.baseFields.init ++
+        ExportSchema.mobileFields :+ ExportSchema.baseFields.last)
       .fields.map(_.copy(nullable = true)))
-
-  private[sources] val fieldByLower: Map[String, (Int, StructField)] =
-    schema.fields.zipWithIndex
-      .map { case (f, i) => f.name.toLowerCase -> (i, f) }.toMap
 }
 
 private[sources] class ExportTable(tableSchema: StructType,
@@ -152,7 +156,7 @@ private[sources] class ExportScanBuilder(path: String,
     }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (accepted, rejected) = filters.partition {
+    val (bounds, rest) = filters.partition {
       case GreaterThanOrEqual("EventStart", v) => asInstant(v).exists { i =>
         tightenLo(i, incl = true); true }
       case GreaterThan("EventStart", v) => asInstant(v).exists { i =>
@@ -163,7 +167,14 @@ private[sources] class ExportScanBuilder(path: String,
         tightenHi(i, incl = true); true }
       case _ => false
     }
-    pushed = accepted
+    // a bound drops every record without a parseable EventStart, so the
+    // not-null filter Catalyst infers from a range also holds at the scan
+    val gated = timeLo.isDefined || timeHi.isDefined
+    val (notNull, rejected) = rest.partition {
+      case IsNotNull("EventStart") => gated
+      case _ => false
+    }
+    pushed = bounds ++ notNull
     rejected
   }
 
@@ -183,25 +194,31 @@ private[sources] class ExportScan(path: String, required: StructType,
   override def description(): String =
     s"graft-export $path, pushed time range: $lo .. $hi"
 
+  // the session's Hadoop configuration (`sc.hadoopConfiguration`, which
+  // carries `spark.hadoop.*`), read when the scan is built on the driver
+  private val hadoopConf =
+    SparkSession.active.sparkContext.hadoopConfiguration
+
   override def planInputPartitions(): Array[InputPartition] = {
-    ExportScan.listBundles(path)
+    ExportScan.listBundles(path, hadoopConf)
       .map(f => ExportInputPartition(f): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ExportReaderFactory(required, lo, hi)
+    new ExportReaderFactory(required, lo, hi,
+      new SerializableConfiguration(hadoopConf))
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ExportMicroBatchStream(path, required, lo, hi)
+    new ExportMicroBatchStream(path, required, lo, hi, hadoopConf)
 }
 
 private[sources] object ExportScan {
   /** Bundle files under `path` (or `path` itself), sorted for a stable
     * partition order. */
-  def listBundles(path: String): Array[String] = {
+  def listBundles(path: String, conf: Configuration): Array[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(conf)
     val files =
       if (fs.getFileStatus(p).isDirectory)
         fs.listStatus(p).filter(_.isFile).map(_.getPath.toString)
@@ -233,7 +250,7 @@ private[sources] object ExportOffset {
 
 /** Micro-batch front of the same connector: each batch is the set of
   * bundle files that appeared since the last committed offset, read by the
-  * identical [[ExportPartitionReader]] — gzip sniff, token-streaming
+  * identical [[ExportPartitionReader]] — gzip detection, token-streaming
   * decode, CustomVars spillover, and the pushed EventStart range all
   * behave exactly as in batch (S5/P4 parity across both execution modes).
   * [[org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow]]
@@ -241,7 +258,8 @@ private[sources] object ExportOffset {
   * drain-and-stop with a stable bound. */
 private[sources] class ExportMicroBatchStream(
     path: String, required: StructType,
-    lo: Option[(Instant, Boolean)], hi: Option[(Instant, Boolean)])
+    lo: Option[(Instant, Boolean)], hi: Option[(Instant, Boolean)],
+    hadoopConf: Configuration)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
@@ -250,12 +268,13 @@ private[sources] class ExportMicroBatchStream(
   private var availableNowEnd: Option[ExportOffset] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(ExportOffset(ExportScan.listBundles(path).toSet))
+    availableNowEnd =
+      Some(ExportOffset(ExportScan.listBundles(path, hadoopConf).toSet))
 
   override def initialOffset(): Offset = ExportOffset(Set.empty)
 
   override def latestOffset(): Offset = availableNowEnd.getOrElse(
-    ExportOffset(ExportScan.listBundles(path).toSet))
+    ExportOffset(ExportScan.listBundles(path, hadoopConf).toSet))
 
   // SupportsAdmissionControl (pulled in by SupportsTriggerAvailableNow):
   // bundle admission is all-or-nothing per poll — a ReadLimit would split
@@ -276,7 +295,8 @@ private[sources] class ExportMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ExportReaderFactory(required, lo, hi)
+    new ExportReaderFactory(required, lo, hi,
+      new SerializableConfiguration(hadoopConf))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -287,12 +307,13 @@ private[sources] case class ExportInputPartition(file: String)
 
 private[sources] class ExportReaderFactory(required: StructType,
                                            lo: Option[(Instant, Boolean)],
-                                           hi: Option[(Instant, Boolean)])
+                                           hi: Option[(Instant, Boolean)],
+                                           conf: SerializableConfiguration)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ExportPartitionReader(
-      partition.asInstanceOf[ExportInputPartition].file, required, lo, hi)
+    new ExportPartitionReader(partition.asInstanceOf[ExportInputPartition].file,
+      required, lo, hi, conf.value)
 }
 
 /** Streams one JSON bundle file with a token-level Jackson parser: O(one
@@ -305,17 +326,20 @@ private[sources] class ExportReaderFactory(required: StructType,
   *   - non-object array elements are skipped too (lenient divergence: Go's
   *     `Decode(&map)` would abort; a scalar element carries no record data
   *     either way).
-  * `.gz` bundles are decompressed inline, as the live wire format is
-  * gzipped JSON (reference: client/export.go download Content-Encoding). */
+  * A bundle that starts with the gzip magic bytes is decompressed inline,
+  * whatever its name, as the live wire format is gzipped JSON (reference:
+  * client/export.go download Content-Encoding). */
 private[sources] class ExportPartitionReader(
     file: String, required: StructType,
-    lo: Option[(Instant, Boolean)], hi: Option[(Instant, Boolean)])
+    lo: Option[(Instant, Boolean)], hi: Option[(Instant, Boolean)],
+    conf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private val mapper = new ObjectMapper()
   private val parser = {
     val p = new Path(file)
-    val raw: java.io.InputStream = p.getFileSystem(new Configuration()).open(p)
+    val raw: java.io.InputStream =
+      new java.io.BufferedInputStream(p.getFileSystem(conf).open(p))
     // Spark never calls close() on a reader whose constructor threw, so any
     // init failure (bad gzip header, non-array framing, parser create) must
     // release the Hadoop stream here or it leaks one handle per bad bundle.
@@ -323,8 +347,10 @@ private[sources] class ExportPartitionReader(
     // Inflater's native buffer, not just the file handle.
     var toClose: java.io.InputStream = raw
     try {
-      val in = if (file.endsWith(".gz"))
-        new java.util.zip.GZIPInputStream(raw) else raw
+      raw.mark(2)
+      val gzipped = raw.read() == 0x1f && raw.read() == 0x8b
+      raw.reset()
+      val in = if (gzipped) new java.util.zip.GZIPInputStream(raw) else raw
       toClose = in
       val jp = mapper.getFactory.createParser(in)
       require(jp.nextToken() == JsonToken.START_ARRAY,
@@ -353,12 +379,21 @@ private[sources] class ExportPartitionReader(
 
   private val timeGated = lo.isDefined || hi.isDefined
 
-  // hoisted out of convert(): this is the innermost loop of the scan, so
-  // the lowercased-name -> ordinal map and the customvars flag must not be
-  // rebuilt per record
-  private val wanted: Map[String, Int] = required.fields.zipWithIndex
-    .map { case (f, i) => f.name.toLowerCase -> i }.toMap
-  private val needCustom = wanted.contains("customvars")
+  // hoisted out of convert(): this is the innermost loop of the scan.
+  // Every canonical field, lowercased, maps to its ordinal in `required`,
+  // or to Pruned when the scan does not need it; a key with no entry is a
+  // custom var.
+  private val Pruned = -1
+  private val ordinals: Map[String, Int] = {
+    val byName = required.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
+    ExportDataSource.schema.fieldNames.map { n =>
+      val l = n.toLowerCase
+      l -> byName.getOrElse(l, Pruned)
+    }.toMap
+  }
+  private val types = required.fields.map(_.dataType)
+  private val customOrdinal = ordinals("customvars")
+  private val needCustom = customOrdinal != Pruned
 
   private def convert(node: JsonNode): Option[InternalRow] = {
     // Event-time pushdown gate — applied ONLY when a bound was actually
@@ -379,20 +414,14 @@ private[sources] class ExportPartitionReader(
       new java.util.LinkedHashMap[String, JsonNode]() else null
 
     node.properties().asScala.foreach { e =>
-      val key = e.getKey
-      ExportDataSource.fieldByLower.get(key.toLowerCase) match {
-        case Some((_, field)) =>
-          wanted.get(field.name.toLowerCase).foreach { i =>
-            values(i) = cast(e.getValue, field.dataType)
-          }
-        case None =>
-          if (needCustom) custom.put(key, e.getValue)
+      ordinals.get(e.getKey.toLowerCase) match {
+        case Some(i) => if (i != Pruned) values(i) = cast(e.getValue, types(i))
+        case None => if (needCustom) custom.put(e.getKey, e.getValue)
       }
     }
-    if (needCustom) {
-      val i = wanted("customvars")
-      values(i) = UTF8String.fromString(mapper.writeValueAsString(custom))
-    }
+    if (needCustom)
+      values(customOrdinal) =
+        UTF8String.fromString(mapper.writeValueAsString(custom))
     Some(new GenericInternalRow(values))
   }
 

@@ -144,9 +144,9 @@ class HttpExportClient(
   * DSv2 connector, so projection and time-range predicates still push into
   * the scan. The wire bundle is gzipped JSON (FORMAT_JSON; the reference
   * decompresses by Content-Encoding, client/export.go download) — the
-  * staged object keeps the wire bytes and the reader gunzips by extension,
-  * sniffed from the gzip magic so plain-JSON servers also work. The staged
-  * object is deleted when the service releases the export. */
+  * staged object keeps the wire bytes, and the reader detects gzip by its
+  * magic bytes, so plain-JSON servers also work. The staged object is
+  * deleted when the service releases the export. */
 class HttpExportSource(spark: SparkSession, client: HttpExportClient,
                        stagingDir: String) extends DataExportSource {
 
@@ -161,13 +161,8 @@ class HttpExportSource(spark: SparkSession, client: HttpExportClient,
     client.getExportProgress(operationId)
 
   override def getExport(exportId: String): DataFrame = {
-    val in = new java.io.PushbackInputStream(client.download(exportId), 2)
-    val m1 = in.read(); val m2 = in.read()
-    if (m2 != -1) { in.unread(m2); in.unread(m1) }
-    else if (m1 != -1) in.unread(m1)
-    val gzipped = m1 == 0x1f && m2 == 0x8b
-    val ext = if (gzipped) "json.gz" else "json"
-    val dest = new Path(s"$stagingDir/$exportId.$ext")
+    val in = client.download(exportId)
+    val dest = new Path(s"$stagingDir/$exportId")
     staged.put(exportId, dest)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(dest, true)

@@ -31,7 +31,7 @@ import graft.transform.{ExportTransform, ValueFormat}
   *     commit: the last mature window end (pinned by MainSpec).
   *
   * The streaming source is the SAME DSv2 connector the batch path scans
-  * with (`graft-export`, micro-batch capability): gzip bundle sniffing,
+  * with (`graft-export`, micro-batch capability): gzip detection,
   * token-streaming decode, unknown-field spillover into CustomVars, and
   * EventStart range pushdown all behave identically in both execution
   * modes — one connector, two front doors.

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Sanitize
-import graft.schema.{ExportSchema, Field}
+import graft.schema.Field
 
 /** Per-sink value rendering strategy (reference: warehouse/warehouse.go:54-71
   * default; warehouse/redshift.go:101-116 Redshift variant). All output is
@@ -121,31 +121,19 @@ object ExportTransform {
     df.select(staged: _*)
   }
 
-  /** Typed (non-stringified) projection into the canonical schema — the
-    * engine-internal form used by analytic queries: schema columns keep
-    * their Spark types, custom vars stay a MapType column. */
-  def toTyped(df: DataFrame, schema: Seq[Field]): DataFrame = {
-    val inputByLower = df.columns.map(c => c.toLowerCase -> c).toMap
-    val schemaLower = schema.flatMap(f =>
-      if (f.isDbOnly) None else Some(f.sourceName.toLowerCase)).toSet
-    val customCols = df.columns.filterNot(c => schemaLower.contains(c.toLowerCase))
-    val customVars: Column =
-      if (customCols.isEmpty)
-        map().cast(MapType(StringType, StringType))
-      else map_filter(
-        map(customCols.toIndexedSeq
-          .flatMap(c => Seq(lit(c), col(c).cast(StringType))): _*),
-        (_, v) => v.isNotNull)
-
-    val cols = schema.map { f =>
-      if (f.sourceName == "CustomVars") customVars.as(f.dbName)
-      else inputByLower.get(f.sourceName.toLowerCase) match {
-        case Some(in) if !f.isDbOnly => col(in).cast(f.dataType).as(f.dbName)
-        case _ => lit(null).cast(
-          if (f.dataType == NullType) StringType else f.dataType).as(f.dbName)
-      }
-    }
-    df.select(cols: _*)
+  /** One JSON object per record of a `graft-export` scan, the form
+    * SaveAsJson stages: the typed columns with the custom vars spliced back
+    * to the top level, flat like the export's own records (reference:
+    * internal/service.go:328-335 stages the export unchanged). The output's
+    * one string column holds the records. */
+  def toRecordJson(export: DataFrame): DataFrame = {
+    val known = to_json(struct(export.columns.toIndexedSeq
+      .filterNot(_ == "CustomVars").map(col): _*))
+    val vars = col("CustomVars")
+    export.select(when(vars === "{}", known).when(known === "{}", vars)
+      .otherwise(concat(known.substr(lit(1), length(known) - 1), lit(","),
+        vars.substr(lit(2), length(vars))))
+      .as("value"))
   }
 
   /** Tumbling-window alignment (P8): next bundle end is
@@ -156,9 +144,4 @@ object ExportTransform {
     val n = dur.toMillis
     Instant.ofEpochMilli(advanced.toEpochMilli / n * n)
   }
-
-  /** Column-level tumbling bucket for the same alignment: maps an event time
-    * to the start of its window. */
-  def windowStart(ts: Column, dur: Duration): Column =
-    timestamp_millis((unix_millis(ts) / dur.toMillis) * dur.toMillis)
 }

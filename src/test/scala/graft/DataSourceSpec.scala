@@ -28,10 +28,12 @@ class DataSourceSpec extends SparkSpec {
 
   private def load = spark.read.format("graft-export").load(fixture)
 
-  test("exposes the canonical 59-column typed schema") {
-    assert(load.schema.length == 59)
+  test("exposes the canonical 67-column typed schema: mobile fields before CustomVars") {
+    assert(load.schema.length == 67)
     assert(load.schema("EventStart").dataType ==
       org.apache.spark.sql.types.TimestampType)
+    assert(load.schema.fieldNames.slice(58, 66).toSeq ==
+      graft.schema.ExportSchema.mobileFields.map(_.dbName))
     assert(load.schema.fieldNames.last == "CustomVars")
   }
 
@@ -68,8 +70,8 @@ class DataSourceSpec extends SparkSpec {
   }
 
   test("gzipped bundles decompress transparently (S4)") {
-    // the wire format is gzipped JSON; Spark's JSON reader (used by
-    // LocalFixtureSource) auto-decompresses .gz
+    // the wire format is gzipped JSON; LocalFixtureSource reads through the
+    // graft-export connector, which detects gzip by its magic bytes
     val dir = Files.createTempDirectory("graft-gz")
     val gz = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(dir.resolve("bundle.json.gz")))
@@ -143,6 +145,30 @@ class DataSourceSpec extends SparkSpec {
     val rows = spark.read.format("graft-export").load(dir.toString).collect()
     assert(rows.length == 1)
     assert(rows(0).getAs[Long]("UserId") == 11L)
+  }
+
+  test("a gzipped bundle with no .gz suffix decodes (magic-byte gzip detection)") {
+    val dir = Files.createTempDirectory("graft-gz-noext")
+    val gz = new java.util.zip.GZIPOutputStream(
+      Files.newOutputStream(dir.resolve("bundle")))
+    gz.write(
+      """[{"EventStart": "2020-08-27T06:00:00Z", "EventType": "click",
+        | "UserId": 12}]""".stripMargin.getBytes("UTF-8"))
+    gz.close()
+    val rows = spark.read.format("graft-export")
+      .load(dir.resolve("bundle").toString).collect()
+    assert(rows.map(_.getAs[Long]("UserId")).toSeq == Seq(12L))
+  }
+
+  test("bundles are listed and opened with the session's Hadoop configuration") {
+    // the scheme is known only to the session's configuration, as a
+    // scheme or a credential set on sc.hadoopConfiguration would be
+    spark.sparkContext.hadoopConfiguration.set("fs.sessiononly.impl",
+      classOf[SessionOnlyFs].getName)
+    val rows = spark.read.format("graft-export")
+      .load(s"sessiononly://$fixture")
+      .filter(col("EventStart") >= "2020-08-28").collect()
+    assert(rows.map(_.getAs[Long]("UserId")).sorted.toSeq == Seq(8L, 9L, 10L))
   }
 
   test("micro-batch stream: incremental bundles, gzip + CustomVars parity") {
@@ -254,4 +280,10 @@ class DataSourceSpec extends SparkSpec {
     assert(types.filter(_ != null).sorted.toSeq ==
       Seq("click", "custom", "load", "navigate"))
   }
+}
+
+/** Local file system under the `sessiononly` scheme, registered on the
+  * session's Hadoop configuration by the test that uses it. */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("sessiononly:///")
 }

@@ -89,6 +89,35 @@ class MainSpec extends SparkSpec {
     assert(rows(whS).size == 2)
   }
 
+  /** Main's error for a config that sets `key` to `value`. A run that
+    * accepted the value fails at once instead, on the missing fixture. */
+  private def rejected(key: String, value: String): String = {
+    val tmp = Files.createTempDirectory("graft-main-reject")
+    val cfg = tmp.resolve("graft.toml")
+    Files.writeString(cfg,
+      s"""StartTime = "2020-08-27T00:00:00Z"
+         |BackoffStepsMax = 0
+         |$key = "$value"
+         |FixturePath = "${tmp.resolve("raw.json")}"
+         |StageDir = "${tmp.resolve("stage")}"
+         |WarehouseDir = "${tmp.resolve("wh")}"
+         |""".stripMargin)
+    intercept[IllegalArgumentException](Main.main(Array(cfg.toString)))
+      .getMessage
+  }
+
+  test("an unknown Source is rejected with the accepted values") {
+    val msg = rejected("Source", "htpp")
+    assert(msg.contains("unknown Source \"htpp\"") &&
+      msg.contains("accepted: fixture, http"), msg)
+  }
+
+  test("an unknown Mode is rejected with the accepted values") {
+    val msg = rejected("Mode", "stream")
+    assert(msg.contains("unknown Mode \"stream\"") &&
+      msg.contains("accepted: batch, streaming"), msg)
+  }
+
   test("TOML sections scope same-named keys; deprecations warn like the reference") {
     import graft.service.ConfigLoader
     // the reference config has Timeout/Bucket/ExportTable in several

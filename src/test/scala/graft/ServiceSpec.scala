@@ -5,13 +5,16 @@ import java.time.{Duration, Instant}
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
+import graft.schema.ExportSchema
 import graft.service.{BundleProcessed, ExportService, RetryPolicy, ServiceConfig, WaitFor}
 import graft.sinks.{HadoopStorage, ParquetWarehouse, StorageSyncPoint}
 import graft.sources.LocalFixtureSource
+import graft.transform.ExportTransform
 
 /** End-to-end service-loop tests: the analog of the reference's golden-file
   * e2e (internal/service_test.go TestHauser scenarios, re-derived with a
@@ -287,23 +290,71 @@ class ServiceSpec extends SparkSpec {
       org.apache.spark.sql.types.LongType) // IndvId, typed again
   }
 
-  test("DSv2-backed source drives the same pipeline (pushdown into the scan)") {
-    val tmp = Files.createTempDirectory("graft-e2e-dsv2")
-    writeFixture(tmp)
+  test("the fixture source's window is pushed into the graft-export scan") {
+    val tmp = Files.createTempDirectory("graft-e2e-pushdown")
+    val src = new LocalFixtureSource(spark, writeFixture(tmp))
+    val op = src.createExport(Instant.parse("2020-08-28T00:00:00Z"),
+      Instant.parse("2020-08-29T00:00:00Z"), Nil)
+    // the frame the service stages: the export under the live projection
+    val staged = ExportTransform.toStagedStrings(
+      src.getExport(src.getExportProgress(op)._2.get),
+      ExportSchema.canonical(includeMobile = false))
+    val plan = staged.queryExecution.sparkPlan
+    val scans = plan.collect { case s: BatchScanExec => s.scan.description() }
+    assert(scans.size == 1 && scans.head.startsWith("graft-export"), plan)
+    assert(scans.head.contains("pushed time range: " +
+      "Some((2020-08-28T00:00:00Z,true)) .. Some((2020-08-29T00:00:00Z,false))"),
+      scans.head)
+    // nothing re-checks EventStart after the scan
+    assert(plan.collect { case f: FilterExec => f }
+      .forall(!_.condition.references.exists(_.name == "EventStart")), plan)
+    assert(staged.select("UserId").collect().map(_.getString(0)).toSeq ==
+      Seq("101", "201"))
+  }
+
+  test("custom-var numbers keep their JSON form: 1 stays 1 next to 1.5") {
+    val tmp = Files.createTempDirectory("graft-e2e-numbers")
+    Files.writeString(tmp.resolve("raw.json"), Seq(
+      """{"EventStart": "2020-08-27T06:00:00Z", "UserId": 1, "evt_n_int": 1}""",
+      """{"EventStart": "2020-08-27T07:00:00Z", "UserId": 2, "evt_n_int": 1.5}""")
+      .mkString("[", ",\n", "]"))
     val storage = new HadoopStorage(tmp.resolve("stage").toString)
-    val wh = new ParquetWarehouse(spark, tmp.resolve("wh").toString)
     val config = ServiceConfig(startTime = startTime,
-      exportDuration = Duration.ofHours(24))
-    val svc = new ExportService(spark, config,
-      new graft.sources.Dsv2ExportSource(spark, tmp.resolve("raw.json").toString),
-      storage, Some(wh),
-      pollInterval = Duration.ofMillis(1), now = () => frozenNow)
-    val bundles = svc.runUntilCaughtUp()
-    assert(bundles.size == 4)
-    assert(wh.readTable().count() == 6)
-    val row = wh.readTable().filter(col("UserId") === "100").collect()(0)
-    assert(row.getAs[String]("EventStart") == "2020-08-27T06:20:26.9Z")
-    assert(row.getAs[String]("CustomVars").contains("\"evt_foo_str\":\"v0\""))
+      exportDuration = Duration.ofHours(24), storageOnly = true)
+    new ExportService(spark, config,
+      new LocalFixtureSource(spark, tmp.resolve("raw.json").toString),
+      storage, None, pollInterval = Duration.ofMillis(1),
+      now = () => frozenNow).runUntilCaughtUp(maxBundles = 1)
+    val rows = storage.readContent("1598486400.csv").get.linesIterator
+      .drop(1).toSeq
+    assert(rows.size == 2)
+    assert(rows(0).endsWith("\"{\"\"evt_n_int\"\":1}\""), rows(0))
+    assert(rows(1).endsWith("\"{\"\"evt_n_int\"\":1.5}\""), rows(1))
+  }
+
+  test("IncludeMobileAppsFields: AppName lands in its column, never in CustomVars") {
+    for (mobile <- Seq(true, false)) {
+      val tmp = Files.createTempDirectory("graft-e2e-mobile")
+      Files.writeString(tmp.resolve("raw.json"),
+        """[{"EventStart": "2020-08-27T06:00:00Z", "EventType": "click",
+          | "UserId": 1, "AppName": "shop", "evt_k_str": "v"}]"""
+          .stripMargin.replace("\n", ""))
+      val wh = new ParquetWarehouse(spark, tmp.resolve("wh").toString)
+      val config = ServiceConfig(startTime = startTime,
+        exportDuration = Duration.ofHours(24), includeMobile = mobile)
+      new ExportService(spark, config,
+        new LocalFixtureSource(spark, tmp.resolve("raw.json").toString),
+        new HadoopStorage(tmp.resolve("stage").toString), Some(wh),
+        pollInterval = Duration.ofMillis(1), now = () => frozenNow)
+        .runUntilCaughtUp(maxBundles = 1)
+      val row = wh.readTable().collect().head
+      // without the mobile columns AppName is dropped, as the export
+      // request does not ask for it
+      assert(row.schema.fieldNames.contains("AppName") == mobile)
+      if (mobile) assert(row.getAs[String]("AppName") == "shop")
+      assert(row.getAs[String]("CustomVars") == """{"evt_k_str":"v"}""",
+        s"includeMobile=$mobile")
+    }
   }
 
   test("golden-file byte parity: staged CSV matches the pinned golden") {

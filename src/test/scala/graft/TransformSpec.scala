@@ -79,19 +79,6 @@ class TransformSpec extends SparkSpec {
     assert(r.getString(0) == "42" && r.getString(1) == "1.5")
   }
 
-  test("typed projection keeps Spark types and map custom vars") {
-    val schema = ExportSchema.reconcileWithExisting(
-      Seq("EventStart", "UserId", "CustomVars"))
-    val out = ExportTransform.toTyped(fixtureDf, schema)
-    assert(out.schema("UserId").dataType ==
-      org.apache.spark.sql.types.LongType)
-    assert(out.schema("EventStart").dataType ==
-      org.apache.spark.sql.types.TimestampType)
-    val cv = out.orderBy(col("EventStart")).collect()(0)
-      .getAs[Map[String, String]]("CustomVars")
-    assert(cv("evt_foo_str") == "bar")
-  }
-
   test("tumbling window alignment truncates to duration boundary (P8)") {
     val d = Duration.ofHours(1)
     assert(ExportTransform.nextEndTime(

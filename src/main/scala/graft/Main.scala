@@ -18,9 +18,10 @@ import graft.sources.{HttpExportClient, HttpExportSource, LocalFixtureSource}
   * StorageOnly), Source = "fixture" | "http" (live client: ApiURL
   * + FsApiToken, the latter falling back to the FS_API_TOKEN environment
   * variable like the reference, config/config.go:152-155),
-  * Mode = "batch" | "streaming", and WarehouseJdbcUrl to load through the
-  * JDBC warehouse instead of the parquet one. Any other Source or Mode
-  * value is rejected.
+  * Mode = "batch" | "streaming" (streaming drains the raw bundles under
+  * FixturePath, so it builds no Source), and WarehouseJdbcUrl to load
+  * through the JDBC warehouse instead of the parquet one. Any other Source
+  * or Mode value is rejected.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -47,17 +48,6 @@ object Main {
       .orElse(SparkSession.getDefaultSession).isDefined
     val spark = GraftSession.create("graft")
 
-    val source = sourceKind match {
-      case "http" =>
-        val token = kv.get("FsApiToken").orElse(sys.env.get("FS_API_TOKEN"))
-          .getOrElse(throw new IllegalArgumentException(
-            "Source=http needs FsApiToken (or the FS_API_TOKEN env var)"))
-        new HttpExportSource(spark,
-          new HttpExportClient(
-            kv.getOrElse("ApiURL", ConfigLoader.DefaultApiUrl), token),
-          need("StageDir") + "/_downloads")
-      case "fixture" => new LocalFixtureSource(spark, need("FixturePath"))
-    }
     // provider-scoped storage timeout (reference: warehouse/s3.go:38-80
     // bounds S3 I/O with `[s3] Timeout`; the gcs section accepts the same
     // key): a hung object-store call fails the bundle after the bound and
@@ -98,6 +88,17 @@ object Main {
         case None => println("[graft] streaming: no mature window yet")
       }
     } else {
+      val source = sourceKind match {
+        case "http" =>
+          val token = kv.get("FsApiToken").orElse(sys.env.get("FS_API_TOKEN"))
+            .getOrElse(throw new IllegalArgumentException(
+              "Source=http needs FsApiToken (or the FS_API_TOKEN env var)"))
+          new HttpExportSource(spark,
+            new HttpExportClient(
+              kv.getOrElse("ApiURL", ConfigLoader.DefaultApiUrl), token),
+            need("StageDir") + "/_downloads")
+        case "fixture" => new LocalFixtureSource(spark, need("FixturePath"))
+      }
       val svc = new ExportService(spark, config, source, storage, warehouse)
       // MaxBundles bounds one invocation (cron-style runs); default unlimited
       val maxBundles = kv.get("MaxBundles").map(_.toInt).getOrElse(Int.MaxValue)

@@ -45,13 +45,6 @@ object Dedup {
     graft.functions.GraftFunctions.minhash_sig(
       TextAnalysis.tokens(text), k, shingleN, useMd5 = true)
 
-  /** Fast MinHash signature (array<long>) via a seeded FNV-1a 64-bit
-    * hash — the scale path, ~10x cheaper than md5. Not oracle-portable,
-    * verified by spec instead. */
-  def minhashSignatureFast(text: Column, k: Int, shingleN: Int): Column =
-    graft.functions.GraftFunctions.minhash_sig(
-      TextAnalysis.tokens(text), k, shingleN, useMd5 = false)
-
   /** LSH band keys: the signature split into `bands` contiguous rows, each
     * band rendered to one string key. Equal band key => candidate pair. */
   def lshBandKeys(sig: Column, k: Int, bands: Int): Column = {

@@ -265,54 +265,6 @@ object Similarity {
           .as("z"))
   }
 
-  /** Brute-force top-k with an int8-quantized phase 1: both sides are
-    * quantized once ([[quantizeInt8]]) and candidates are scored on the
-    * 4x-smaller code arrays (the per-vector scales cancel in the cosine,
-    * so phase 1 is pure integer dot / norm arithmetic); the top
-    * `k + margin` per query re-rank with the full-precision codegen'd
-    * kernel. At 100 TB this is the memory-bandwidth play: the corpus scan
-    * that dominates brute-force search reads a quarter of the bytes, and
-    * only survivors touch float vectors. Quantization error bounds phase-1
-    * score error to ~1e-2, so `margin` trades recall for re-rank cost
-    * (spec asserts recall vs the exact search on a clustered fixture). */
-  def bruteForceTopKInt8(corpus: DataFrame, queries: DataFrame, k: Int,
-                         margin: Int = 32,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      quantizeInt8(col(vecCol)).getField("codes").as("q_codes"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-      quantizeInt8(col(vecCol)).getField("codes").as("c_codes"))
-    val idot = aggregate(
-      zip_with(col("q_codes"), col("c_codes"),
-        (x, y) => (x * y).cast("long")),
-      lit(0L), (acc, v) => acc + v).cast("double")
-    def inorm(codes: Column) = sqrt(aggregate(
-      transform(codes, x => (x * x).cast("long")),
-      lit(0L), (acc, v) => acc + v).cast("double"))
-    val scored = c.join(Hints.boundedBroadcast(q, "query_set_contract"),
-        col("query_id") =!= col("neighbor_id"))
-      .withColumn("fsim",
-        when(inorm(col("q_codes")) === 0 || inorm(col("c_codes")) === 0,
-          lit(0.0))
-          .otherwise(idot / (inorm(col("q_codes")) * inorm(col("c_codes")))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .join(Hints.boundedBroadcast(
-        partialTopK(scored, col("fsim"), k + margin), "topk_capped"),
-        Seq("neighbor_id"))
-      .join(Hints.boundedBroadcast(
-        q.select(col("query_id"), col("q_vec")), "query_set_contract"),
-        Seq("query_id"))
-      .withColumn("sim",
-        round(GraftFunctions.cosine_sim(col("q_vec"), col("c_vec")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("sim"),
-        col("rk").cast("int").as("rk"))
-  }
-
   /** The centroid set as a foldable literal Column — the "broadcast" of a
     * by-definition-small model (k × dim floats, driver-collected once) that
     * lets [[graft.functions.NearestCells]] assign cells as a pure
@@ -613,37 +565,6 @@ object Similarity {
                 mat: Materializer = Materializer.Local): DataFrame =
     ivfPqSearch(mat(ivfPqIndex(corpus, seeds, codebooks, idCol, vecCol)),
       queries, seeds, codebooks, k, nprobe, idCol, vecCol)
-
-  /** IVF-PQ with the standard production REFINE step (the FAISS
-    * IVFPQR recipe): the ADC scan retrieves `k * refine` candidates per
-    * query from the compressed index, then an exact cosine re-rank
-    * touches the FLOAT vectors for only those candidate rows — an
-    * equi-join on neighbor id against the cold float store, k·refine·|Q|
-    * rows, never a corpus scan. Quantization error that reorders or
-    * drops true neighbors near the ADC cut is repaired at the cost of
-    * one bounded id-join; recall is >= the unrefined search's by
-    * construction (spec-pinned). */
-  def ivfPqSearchRefined(index: DataFrame, queries: DataFrame,
-                         seeds: DataFrame,
-                         codebooks: Array[Array[Array[Float]]],
-                         corpus: DataFrame, k: Int,
-                         nprobe: Int = 1, refine: Int = 4,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
-    require(refine >= 1, "refine must be >= 1")
-    val adc = ivfPqSearch(index, queries, seeds, codebooks, k * refine,
-      nprobe, idCol, vecCol)
-    val scored = adc.select(col("query_id"), col("neighbor_id"))
-      .join(corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("c_vec")), Seq("neighbor_id"))
-      .join(Hints.boundedBroadcast(queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("q_vec")), "query_set_contract"), Seq("query_id"))
-      .withColumn("sim",
-        round(GraftFunctions.cosine_sim(col("q_vec"), col("c_vec")), 6))
-    partialTopK(scored, col("sim"), k)
-      .select(col("query_id"), col("neighbor_id"),
-        col("hsim").as("sim"), col("hrk").as("rk"))
-  }
 
   /** Reference HOF formulation of the ADC cosine (executable spec of
     * [[graft.functions.AdcCosine]]'s semantics, pinned by a differential

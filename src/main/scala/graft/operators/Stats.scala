@@ -2080,9 +2080,7 @@ object Stats {
   }
 
   /** Merged heavy-hitter bracket over a `(shard, tok, c)` counts frame —
-    * the q309 readout, factored so the batch query and the streaming
-    * maintenance face ([[graft.streaming.FreqItemsStream]]) are
-    * bit-identical by construction. Per shard: the `kTop` most frequent
+    * the q309 readout. Per shard: the `kTop` most frequent
     * tokens (count desc, token asc — deterministic) plus
     * `err_s` = the largest DROPPED count (Agarwal et al., PODS 2012
     * mergeable summaries); a shard's true count for any item is exact if

@@ -1658,10 +1658,9 @@ object TextAnalysis {
       .orderBy(col(groupCol))
   }
 
-  /** Per-document tokenizer-fertility partial (q322 /
-    * [[graft.streaming.FertilityStream]]): (lang, source, whitespace
-    * tokens, characters) — the associative integer facts the drift
-    * bracket aggregates. Map-side projection; NULL text contributes
+  /** Per-document tokenizer-fertility partial (q322): (lang, source,
+    * whitespace tokens, characters) — the associative integer facts the
+    * drift bracket aggregates. Map-side projection; NULL text contributes
     * (0, 0) like the SQL replay's COALESCE. */
   def fertilityPartials(docs: DataFrame, textCol: String): DataFrame =
     docs.select(col("lang"), col("source"),
@@ -1675,8 +1674,8 @@ object TextAnalysis {
     * its language's norm signals content-mix or encoding change.
     * Input is any associative partial stream from
     * [[fertilityPartials]] (one batch or many); sums are exact integer
-    * algebra, so batch and streaming faces are bit-identical by
-    * construction. Zero-token groups take the explicit 0.0 branch in
+    * algebra, so the bracket does not depend on how the partials were
+    * split. Zero-token groups take the explicit 0.0 branch in
     * BOTH engines (the q311 oracle lesson). Two group-keyed
     * partial-combined aggregates + one lang-keyed join of two
     * lang-bounded frames — nothing here scales past |langs x sources|

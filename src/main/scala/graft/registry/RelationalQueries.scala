@@ -4638,9 +4638,7 @@ private[graft] object RelationalQueries {
       // per-shard rank window partitions by shard — parallel across
       // shards, and in the sharded-ANALYZE deployment each shard's
       // (tok, c) histogram is machine-local by construction. The
-      // summarization body is the shared Stats.heavyHitterBracket, so
-      // the streaming maintenance face (FreqItemsStream) is
-      // bit-identical by construction.
+      // summarization body is Stats.heavyHitterBracket.
       GraftFunctions.register(s)
       val toks = t(s, dir, "documents").select(
         operators.Sharding.shardOf("doc_id", 4).as("shard"),

@@ -3152,10 +3152,7 @@ private[graft] object TextAnalysisQueries {
       // tokenizer-fertility drift monitor: per (lang, source),
       // chars-per-token fertility vs the language-wide reference, with
       // a 2% drift flag — the rollout readout that catches a source
-      // whose content mix (or encoding) shifted under a tokenizer. The
-      // same associative (toks, chars) partials feed the streaming face
-      // (streaming.FertilityStream), so batch and stream are
-      // bit-identical by construction.
+      // whose content mix (or encoding) shifted under a tokenizer.
       TextAnalysis.fertilityBracket(
         TextAnalysis.fertilityPartials(t(s, dir, "documents"), "text"))
     }),

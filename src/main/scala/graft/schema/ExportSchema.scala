@@ -10,7 +10,6 @@ import org.apache.spark.sql.types._
   * DB-only columns that have no source field), `dataType` the Spark type.
   */
 final case class Field(dbName: String, sourceName: String, dataType: DataType) {
-  def isTime: Boolean = dataType == TimestampType
   def isDbOnly: Boolean = sourceName.isEmpty
 }
 

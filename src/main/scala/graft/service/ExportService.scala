@@ -40,6 +40,12 @@ final case class ServiceConfig(
       "(reference: config/config.go:181-187)")
   require(exportDelay.getSeconds >= 3600,
     "ExportDelay must be >= 1h (reference: config/config.go:189-193)")
+
+  /** Watermark gate: a window is exported once now - delay >= its end
+    * (reference: internal/service.go:286-294). Delays whole windows —
+    * deliberately NOT a per-record withWatermark (SURVEY.md §7.4 trap 6). */
+  def isMature(end: Instant, now: Instant): Boolean =
+    !now.isBefore(end.plus(exportDelay))
 }
 
 /** Retry classification + exponential backoff
@@ -82,8 +88,9 @@ final case class WaitFor(d: Duration) extends StepResult
   * the heavy transform:
   *
   * plan window -> watermark gate -> pushdown scan (source export) ->
-  * one-select transform -> CSV/JSON staging -> warehouse load (idempotent
-  * partition overwrite) -> sync-point commit.
+  * one-select transform -> CSV/JSON staging -> warehouse load (the first
+  * window of a day replaces the day, later windows append) -> sync-point
+  * commit.
   *
   * Each bundle is decoded once: the staging write is the only Spark action
   * on the fetched export, and the bundle's row count is observed by that
@@ -102,25 +109,17 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
 
   private var schema: Seq[Field] = ExportSchema.canonical(config.includeMobile)
 
-  /** Startup: create-or-reconcile the export table; the reconciled schema
-    * becomes the session IR driving the source field list, transform order
-    * and CSV header (reference: internal/service.go:247-266, SURVEY.md §3.2). */
+  /** Startup: create-or-reconcile the export table
+    * ([[ExportService.reconcileSchema]]). */
   def init(): Unit = {
     // UseStartTime: discard the storage sync file so processing restarts
     // from config.StartTime (reference: warehouse/localdisk.go:27-33)
     if (config.useStartTime && config.storageOnly)
       storage.deleteFile(StorageSyncPoint.SyncFileName)
     warehouse.foreach { wh =>
-      val created = wh.initExportTable(schema)
-      if (!created) {
-        val live = wh.getExportTableColumns()
-        schema = ExportSchema.reconcileWithExisting(live, config.includeMobile)
-        wh.applyExportSchema(schema)
-      }
+      schema = ExportService.reconcileSchema(wh, config.includeMobile)
     }
   }
-
-  def currentSchema: Seq[Field] = schema
 
   private def lastSyncPoint(): Option[Instant] =
     if (config.storageOnly) StorageSyncPoint.read(storage)
@@ -132,11 +131,8 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
     val start = lastSync
     val end = ExportTransform.nextEndTime(start, config.effectiveDuration)
 
-    // Watermark gate: only process a window once now - delay >= end
-    // (reference: internal/service.go:286-294). Delays whole windows —
-    // deliberately NOT a per-record withWatermark (SURVEY.md §7.4 trap 6).
-    val mature = !now().isBefore(end.plus(config.exportDelay))
-    if (!mature) return WaitFor(Duration.between(now(), end.plus(config.exportDelay)))
+    if (!config.isMature(end, now()))
+      return WaitFor(Duration.between(now(), end.plus(config.exportDelay)))
 
     // Submit + poll (reference: internal/service.go:297-314)
     val fields = ExportSchema.sourceFieldList(schema)
@@ -191,10 +187,9 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
   private def isDayStart(t: Instant): Boolean =
     t.getEpochSecond % 86400 == 0
 
-  /** Crash recovery before the first bundle and each retry (reference:
-    * SURVEY.md §3.3): heal rows loaded past the sync point, or StartTime. */
+  /** Crash recovery before the first bundle and each retry. */
   def recover(): Unit = warehouse.foreach { wh =>
-    wh.removeOrphanedRecords(lastSyncPoint().getOrElse(config.startTime))
+    ExportService.recover(wh, lastSyncPoint(), config.startTime)
   }
 
   /** Run until caught up: process windows until the watermark gate says
@@ -224,5 +219,36 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
       }
     }
     out.toSeq
+  }
+}
+
+/** The startup rules both front doors share: the batch loop
+  * ([[ExportService]]) and the streaming drain
+  * ([[graft.streaming.StreamingService]]). */
+object ExportService {
+
+  /** Create the export table, or reconcile the live one with the canonical
+    * schema; the result is the session IR driving the source field list,
+    * transform order and CSV header (reference: internal/service.go:247-266,
+    * SURVEY.md §3.2). */
+  def reconcileSchema(wh: Warehouse, includeMobile: Boolean): Seq[Field] = {
+    val canonical = ExportSchema.canonical(includeMobile)
+    if (wh.initExportTable(canonical)) canonical
+    else {
+      val schema = ExportSchema.reconcileWithExisting(
+        wh.getExportTableColumns(), includeMobile)
+      wh.applyExportSchema(schema)
+      schema
+    }
+  }
+
+  /** Crash recovery (reference: SURVEY.md §3.3): heal rows loaded past the
+    * committed sync point, or past StartTime when none is committed.
+    * Returns that point, where the next window starts. */
+  def recover(wh: Warehouse, lastSync: Option[Instant],
+              startTime: Instant): Instant = {
+    val from = lastSync.getOrElse(startTime)
+    wh.removeOrphanedRecords(from)
+    from
   }
 }

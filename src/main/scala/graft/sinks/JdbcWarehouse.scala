@@ -182,7 +182,7 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String,
   }
 
   override def removeOrphanedRecords(syncPoint: Instant): Unit = {
-    val orphaned = maxEventStart().exists(_.isAfter(syncPoint))
+    val orphaned = maxEventStart().exists(!_.isBefore(syncPoint))
     if (orphaned)
       exec(dialect.deleteOrphans(dbSchema, exportTable, syncPoint))
   }

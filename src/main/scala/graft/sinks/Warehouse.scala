@@ -32,9 +32,12 @@ trait Warehouse {
   /** Committed sync point (reference: redshift.go:266-328, bigquery.go:59-128). */
   def lastSyncPoint(): Option[Instant]
   def saveSyncPoint(bundleEnd: Instant): Unit
-  /** Exactly-once healing: remove rows loaded after the last committed
-    * sync point (reference: redshift.go:330-354 DELETE;
-    * bigquery.go:82-104 day-rewind + partition truncate). */
+  /** Exactly-once healing: remove rows loaded at or after the last
+    * committed sync point (reference: redshift.go:330-354 DELETE;
+    * bigquery.go:82-104 day-rewind + partition truncate). Windows are
+    * `[start, end)`, so a row AT the sync point belongs to the uncommitted
+    * window; the reference's `EventStart > sync` would keep it and load it
+    * twice on retry. */
   def removeOrphanedRecords(syncPoint: Instant): Unit
 }
 
@@ -175,20 +178,6 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
     * parse before comparing; NULL where it does not parse. */
   private def eventTime = try_to_timestamp(col("EventStart"))
 
-  /** Partition-expiration TTL: drop day partitions older than
-    * `retentionDays` relative to `asOf` — the maintenance-job analog of
-    * BigQuery's table partition expiration
-    * (reference: warehouse/bigquery.go:213-226,343-351; SURVEY.md §4 notes
-    * the TTL needs a small job, not a Catalyst rule). Partition-dir deletes
-    * only; no data rewrite. */
-  def expirePartitions(retentionDays: Int, asOf: Instant): Int = {
-    val cutoff = asOf.atOffset(ZoneOffset.UTC).toLocalDate
-      .minusDays(retentionDays).toString
-    val expired = dayPartitions().filter(_._1 < cutoff)
-    expired.foreach { case (_, p) => dataFs.delete(p, true) }
-    expired.length
-  }
-
   private def dataFs: FileSystem =
     new Path(dataPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -203,13 +192,13 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
   }
 
   override def removeOrphanedRecords(syncPoint: Instant): Unit = {
-    val orphaned = maxEventStart(syncPoint).exists(_.isAfter(syncPoint))
+    val orphaned = maxEventStart(syncPoint).exists(!_.isBefore(syncPoint))
     if (orphaned) {
       // Redshift-flavor healing: partition-scoped DELETE WHERE. The
       // BigQuery flavor ([[BigQueryParquetWarehouse]]) instead rewinds the
       // sync point and truncates on reload.
-      // Rewrite only the affected day partitions, keeping rows at or
-      // before the sync point and, like the reference's DELETE, NULLs — a
+      // Rewrite only the affected day partitions, keeping rows before the
+      // sync point and, like the reference's DELETE, NULLs — a
       // partition-scoped DELETE WHERE
       // (reference: redshift.go:284-294; Spark-native per SURVEY.md §2.5).
       // Materialize survivors (localCheckpoint — Spark won't overwrite a
@@ -220,7 +209,7 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
       val affected = dayPartitions().filter(_._1 >= day)
       val healed = readFrom(syncPoint)
         .filter(eventTime.isNull ||
-          eventTime <= lit(syncPoint.toString).cast("timestamp"))
+          eventTime < lit(syncPoint.toString).cast("timestamp"))
         .localCheckpoint(true)
       affected.foreach { case (_, p) => dataFs.delete(p, true) }
       healed.write.mode(SaveMode.Append).partitionBy("day").parquet(dataPath)
@@ -235,7 +224,7 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
   * sync-row removal).
   *
   * Partitioned tables take no row-wise DELETE, so when leftover records
-  * are found past the committed sync point (a load that crashed before
+  * are found at or past the committed sync point (a load that crashed before
   * its sync write), recovery REWINDS the sync point to the start of that
   * day and commits the rewound point; the service then re-exports from the
   * day boundary and the first bundle of the day loads with
@@ -247,7 +236,7 @@ class BigQueryParquetWarehouse(spark: SparkSession, tablePath: String)
 
   override def lastSyncPoint(): Option[Instant] =
     super.lastSyncPoint().map { t =>
-      if (!maxEventStart(t).exists(_.isAfter(t))) t
+      if (!maxEventStart(t).exists(!_.isBefore(t))) t
       else {
         // leftover data past the sync point: rewind to the first instant
         // of its day; the day's first reloaded bundle truncates the

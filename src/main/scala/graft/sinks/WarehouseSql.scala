@@ -54,11 +54,12 @@ trait WarehouseSqlDialect {
       s"ALTER TABLE ${qualifiedName(schema, table)} ADD COLUMN ${quote(f.dbName)} ${ddlType(f.dataType)}")
 
   /** Anti-duplicate delete for crash recovery
-    * (reference: warehouse/redshift.go:284-294). */
+    * (reference: warehouse/redshift.go:284-294), with `>=` where the
+    * reference has `>`: see [[Warehouse.removeOrphanedRecords]]. */
   def deleteOrphans(schema: Option[String], table: String,
                     syncPoint: Instant): String =
     s"DELETE FROM ${qualifiedName(schema, table)} " +
-      s"WHERE ${quote("EventStart")} > ${timestampLiteral(syncPoint)}"
+      s"WHERE ${quote("EventStart")} >= ${timestampLiteral(syncPoint)}"
 
   /** Day-scoped delete: the DELETE-based analog of BigQuery's WriteTruncate
     * for the first bundle of a day (reference: bigquery.go:130-161) on
@@ -103,7 +104,7 @@ object RedshiftSql extends WarehouseSqlDialect {
   def deleteOrphans(schema: Option[String], table: String,
                     syncPointIso: String): String =
     s"DELETE FROM ${qualifiedName(schema, table)} " +
-      s"WHERE EventStart > '$syncPointIso'"
+      s"WHERE EventStart >= '$syncPointIso'"
 
   /** Bulk load of a staged CSV object
     * (reference: warehouse/redshift.go:241-246 CopyInData). */
@@ -154,9 +155,4 @@ object BigQuerySql {
     case other => throw new IllegalArgumentException(
       s"no BigQuery mapping for ${other.catalogString}")
   }
-
-  /** Day-partition decorator targeting one partition of a date-partitioned
-    * table (reference: warehouse/bigquery.go:142,147 `table$YYYYMMDD`). */
-  def partitionDecorator(table: String, day: java.time.LocalDate): String =
-    s"$table$$${day.toString.replace("-", "")}"
 }

@@ -6,8 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.schema.ExportSchema
-import graft.service.ServiceConfig
+import graft.service.{ExportService, ServiceConfig}
 import graft.sinks.{CsvStage, Storage, Warehouse}
 import graft.transform.{ExportTransform, ValueFormat}
 
@@ -46,26 +45,18 @@ object StreamingService {
                       warehouse: Warehouse, checkpointDir: String,
                       now: () => Instant = () => Instant.now())
       : Option[Instant] = {
-    // schema init + reconcile, as ExportService.init
-    var schema = ExportSchema.canonical(config.includeMobile)
-    if (!warehouse.initExportTable(schema)) {
-      val live = warehouse.getExportTableColumns()
-      schema = ExportSchema.reconcileWithExisting(live, config.includeMobile)
-      warehouse.applyExportSchema(schema)
-    }
+    // the batch loop's startup: schema reconcile, then recovery
+    val schema = ExportService.reconcileSchema(warehouse, config.includeMobile)
+    val lastSync = ExportService.recover(warehouse, warehouse.lastSyncPoint(),
+      config.startTime)
 
-    // recovery before loading, as ExportService.recover
-    val lastSync = warehouse.lastSyncPoint().getOrElse(config.startTime)
-    warehouse.removeOrphanedRecords(lastSync)
-
-    // maturity gate: the largest window end with now - delay >= end — the
-    // batch loop's final committed sync point
+    // maturity gate: the largest mature window end — the batch loop's
+    // final committed sync point
     val dur = config.effectiveDuration
-    var end = ExportTransform.nextEndTime(lastSync, dur)
-    if (now().isBefore(end.plus(config.exportDelay))) return None
+    val end = ExportTransform.nextEndTime(lastSync, dur)
+    if (!config.isMature(end, now())) return None
     var syncEnd = end
-    while (!now().isBefore(
-        ExportTransform.nextEndTime(syncEnd, dur).plus(config.exportDelay)))
+    while (config.isMature(ExportTransform.nextEndTime(syncEnd, dur), now()))
       syncEnd = ExportTransform.nextEndTime(syncEnd, dur)
 
     // micro-batch stream over raw bundles through the DSv2 connector,

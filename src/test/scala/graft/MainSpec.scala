@@ -89,6 +89,32 @@ class MainSpec extends SparkSpec {
     assert(rows(whS).size == 2)
   }
 
+  test("Mode=streaming builds no export source: Source=http needs no token") {
+    assume(sys.env.get("FS_API_TOKEN").isEmpty)
+    spark // materialize the shared session BEFORE Main so it embeds
+    val tmp = Files.createTempDirectory("graft-main-stream-http")
+    val rawDir = Files.createDirectories(tmp.resolve("rawdir"))
+    val day0 = java.time.Instant.now()
+      .truncatedTo(java.time.temporal.ChronoUnit.DAYS)
+      .minus(java.time.Duration.ofDays(3))
+    Files.writeString(rawDir.resolve("raw.json"),
+      s"""[{"EventStart": "${day0.plusSeconds(6 * 3600)}", "UserId": 100}]""")
+    val cfg = tmp.resolve("graft.toml")
+    Files.writeString(cfg,
+      s"""StartTime = "$day0"
+         |ExportDuration = "24h"
+         |Mode = "streaming"
+         |Source = "http"
+         |FixturePath = "$rawDir"
+         |StageDir = "${tmp.resolve("stage")}"
+         |WarehouseDir = "${tmp.resolve("wh")}"
+         |""".stripMargin)
+    Main.main(Array(cfg.toString))
+    val wh = new graft.sinks.ParquetWarehouse(spark, tmp.resolve("wh").toString)
+    assert(wh.lastSyncPoint().isDefined)
+    assert(wh.readTable().count() == 1)
+  }
+
   /** Main's error for a config that sets `key` to `value`. A run that
     * accepted the value fails at once instead, on the missing fixture. */
   private def rejected(key: String, value: String): String = {

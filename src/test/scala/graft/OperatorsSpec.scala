@@ -375,11 +375,6 @@ class OperatorsSpec extends SparkSpec {
     assert(multi >= single, s"multi-probe $multi < single-probe $single")
     assert(multi >= 0.70, s"multi-probe recall@5 $multi below target")
 
-    // int8-prefiltered brute force: phase 1 on quantized codes, exact
-    // re-rank — near-exact recall at a quarter of the scan bytes
-    val int8 = recall(Similarity.bruteForceTopKInt8(emb, queries, k = 5))
-    assert(int8 >= 0.9, s"int8-prefilter recall@5 $int8 below target")
-
     val seeds = emb.filter(col("vec_id") % 20 === 0) // near-center seeds
     val n1 = recall(Similarity.ivfTopK(emb, queries, seeds, k = 5))
     val n3 = recall(Similarity.ivfTopK(emb, queries, seeds, k = 5,
@@ -977,34 +972,6 @@ class OperatorsSpec extends SparkSpec {
       .collect()(0).getSeq[String](0)
     assert(one == Seq("table", "value", "join", "ord", "er", "g", "ro",
       "u", "p"))
-  }
-
-  test("IVF-PQ refine: exact re-rank of ADC candidates never loses recall") {
-    val s = spark
-    import s.implicits._
-    GraftFunctions.register(spark)
-    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val seeds = emb.filter(col("vec_id") < 8)
-    val qs = emb.filter(col("vec_id") < 20)
-    val cb = Similarity.trainPqCodebooks(emb, m = 8, ksub = 32, iters = 3)
-    val index = Similarity.ivfPqIndex(emb, seeds, cb).localCheckpoint(true)
-    val exact = Similarity.bruteForceTopK(emb, qs, k = 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def recall(df: org.apache.spark.sql.DataFrame): Int = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet.intersect(exact).size
-    val plain = Similarity.ivfPqSearch(index, qs, seeds, cb, k = 10,
-      nprobe = 3)
-    val refined = Similarity.ivfPqSearchRefined(index, qs, seeds, cb, emb,
-      k = 10, nprobe = 3, refine = 4)
-    // exactly k rows per query, no duplicate neighbors
-    val rows = refined.collect()
-    assert(rows.length == 20 * 10)
-    assert(rows.map(r => (r.getLong(0), r.getLong(1))).distinct.length ==
-      rows.length)
-    val (rPlain, rRefined) = (recall(plain), recall(refined))
-    assert(rRefined >= rPlain && rRefined > 50,
-      s"refined=$rRefined plain=$rPlain")
-    info(s"recall@10 over 20 queries: plain=$rPlain refined=$rRefined / 200")
   }
 
   test("boilerplateStats flags corpus-frequent passages; hash keys agree") {

@@ -431,38 +431,6 @@ class ServiceSpec extends SparkSpec {
     assert(bundles.size == 4)
   }
 
-  test("partition TTL expires old day partitions without touching recent ones") {
-    val tmp = Files.createTempDirectory("graft-ttl")
-    val (svc, _, Some(wh)) = newService(tmp): @unchecked
-    svc.runUntilCaughtUp()
-    assert(wh.readTable().count() == 6) // days 08-27..29
-    val n = wh.expirePartitions(retentionDays = 3,
-      asOf = Instant.parse("2020-08-31T00:00:00Z")) // cutoff 08-28
-    assert(n == 1) // only day=2020-08-27 expired
-    assert(wh.readTable().count() == 4)
-    assert(wh.readTable().filter(col("day") === "2020-08-27").count() == 0)
-  }
-
-  test("multi-tenant: independent pipelines share one session (multi-hauser)") {
-    import graft.service.MultiTenant
-    def mkTenant(name: String): MultiTenant.Tenant = {
-      val tmp = Files.createTempDirectory(s"graft-mt-$name")
-      writeFixture(tmp)
-      MultiTenant.Tenant(name,
-        ServiceConfig(startTime = startTime,
-          exportDuration = Duration.ofHours(24)),
-        new LocalFixtureSource(spark, tmp.resolve("raw.json").toString),
-        new HadoopStorage(tmp.resolve("stage").toString),
-        Some(new ParquetWarehouse(spark, tmp.resolve("wh").toString)))
-    }
-    val results = MultiTenant.runAll(spark,
-      Seq(mkTenant("a"), mkTenant("b"), mkTenant("c")),
-      parallelism = 3, now = () => frozenNow)
-    assert(results.size == 3)
-    assert(results.values.forall(_.isRight))
-    assert(results.values.forall(_.toOption.get.size == 4))
-  }
-
   test("retry policy: 429/5xx retryable with exponential backoff, 4xx fatal") {
     import RetryPolicy._
     assert(retryInfo(Retryable(429, None)).isDefined)

@@ -216,427 +216,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty && streamed == full)
   }
 
-  test("NearDupStream: two batches plus a kill-and-restart reproduce " +
-      "the q65 incremental pair set exactly, and a crash-replayed batch " +
-      "rewrites itself without duplicating") {
-    // the first-class streaming front door for incremental near-dup
-    // (T1-T5 lifecycle): the historical corpus (even doc_ids, q65's
-    // "persisted index" side) arrives through the same stream, then
-    // today's odd ids arrive split across two drops with the query
-    // RESTARTED from its checkpoint between them — the union of the odd
-    // batches' pair outputs must equal the q65 batch oracle, and
-    // re-running the last batch (a crash replay of an uncommitted
-    // commit) must leave both the pair log and the index unchanged.
-    val s = spark
-    import s.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    import graft.streaming.NearDupStream
-    val dir = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val root = Files.createTempDirectory("graft-neardup-stream")
-    val dropDir = root.resolve("drop").toString
-    val idxDir = root.resolve("index").toString
-    val pairsDir = root.resolve("pairs").toString
-    val ckpt = root.resolve("ckpt").toString
-    def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = root.resolve(s"tmp_$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val f = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      new java.io.File(dropDir).mkdirs()
-      java.nio.file.Files.move(f.toPath,
-        java.nio.file.Paths.get(dropDir, s"$name.parquet"))
-    }
-    def runOnce(): Unit = {
-      val q = NearDupStream.runAvailableNow(
-        NearDupStream.readDocs(spark, dropDir, docs.schema),
-        "doc_id", "text", idxDir, pairsDir, ckpt, fast = false)
-      q.awaitTermination(120000)
-    }
-    // a log with no batches yet reads as an EMPTY frame (explicit
-    // schema), not a parquet schema-inference failure
-    assert(NearDupStream.confirmedPairs(spark, pairsDir, ckpt).isEmpty)
-    // run 1: the historical corpus through the same front door (batch 0)
-    drop(docs.filter(col("doc_id") % 2 === 0), "b0")
-    runOnce()
-    // run 2 (restart): first half of today's batch (batch 1)
-    drop(docs.filter(col("doc_id") % 4 === 1), "b1")
-    runOnce()
-    // run 3 (the kill-and-restart): a FRESH query from the same
-    // checkpoint picks up only the second half (batch 2)
-    drop(docs.filter(col("doc_id") % 4 === 3), "b2")
-    runOnce()
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getDouble(2))).toSet
-    val newPairs = pairSet(spark.read.parquet(pairsDir)
-      .filter(col("batch_id").cast("long") >= 1L)
-      .select(col("a_id"), col("b_id"), col("sim")))
-    val expected = pairSet(
-      SparkEntry.queries("q65_dedup_incremental")(spark, dir))
-    assert(newPairs.nonEmpty && newPairs == expected,
-      s"streamed=${newPairs.size} expected=${expected.size}")
-    // crash replay: re-run the LAST batch with the same batch id — the
-    // dynamic partition overwrite must rewrite identical content, and
-    // the historical filter must exclude the batch's own index rows
-    val beforePairs = pairSet(
-      NearDupStream.confirmedPairs(spark, pairsDir, ckpt))
-    val beforeIdxRows = spark.read.parquet(idxDir).count()
-    val lastId = spark.read.parquet(idxDir)
-      .agg(max(col("batch_id").cast("long"))).collect()(0).getLong(0)
-    NearDupStream.processBatch(docs.filter(col("doc_id") % 4 === 3),
-      lastId, "doc_id", "text", idxDir, pairsDir, fast = false)
-    assert(pairSet(NearDupStream.confirmedPairs(spark, pairsDir, ckpt))
-      == beforePairs, "replay changed the pair log")
-    assert(spark.read.parquet(idxDir).count() == beforeIdxRows,
-      "replay changed the index")
-    // composition: connected components over the streamed pair log equal
-    // the q54 batch clustering — dedup CLUSTERS need no separate
-    // streaming state or read-modify-write label store, because labels
-    // are a pure function of the (append-only, exactly-once) pair log
-    val streamedClusters = graft.operators.Dedup
-      .nearDupClusters(NearDupStream.confirmedPairs(spark, pairsDir,
-        ckpt))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batchClusters = SparkEntry
-      .queries("q54_dedup_clusters")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamedClusters == batchClusters,
-      s"streamed=${streamedClusters.size} batch=${batchClusters.size}")
-    // committed-only visibility (the read-DURING-drain contract): an
-    // in-flight batch — written, but not yet in the checkpoint's commit
-    // log — is EXCLUDED from the front-door read and visible only to
-    // the explicit Uncommitted escape
-    NearDupStream.processBatch(docs.filter(col("doc_id") % 2 === 1),
-      lastId + 5, "doc_id", "text", idxDir, pairsDir, fast = false)
-    val inflight = spark.read.parquet(pairsDir)
-      .filter(col("batch_id").cast("long") === lastId + 5).count()
-    assert(inflight > 0, "the in-flight batch must emit pairs")
-    assert(pairSet(NearDupStream.confirmedPairs(spark, pairsDir, ckpt))
-      == beforePairs, "front door saw the in-flight batch")
-    assert(NearDupStream.confirmedPairsUncommitted(spark, pairsDir).count()
-      == NearDupStream.confirmedPairs(spark, pairsDir, ckpt).count()
-        + inflight,
-      "the uncommitted escape must see exactly the in-flight rows")
-  }
-
-  test("SynopsisStream: per-batch histogram partials across a " +
-      "checkpoint restart give the batch V-optimal construction, and a " +
-      "crash-replayed batch rewrites only itself") {
-    // the first-class exactly-once face of the ANALYZE refresh below:
-    // each batch ships only its own partial into a batch_id partition,
-    // the synopsis is merged on read (associative Σc-by-v — no
-    // read-modify-write state to race with), and the checkpoint makes a
-    // killed-and-restarted drain process only the new file.
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.functions.{col, count, lit, max}
-    import graft.streaming.SynopsisStream
-    val batch1 = (1 to 40).map(i => (i.toLong, (i % 5 + 1).toLong * 100))
-    val batch2 = (41 to 90).map(i => (i.toLong, (i % 9 + 3).toLong * 100))
-    val root = Files.createTempDirectory("graft-synopsis-stream")
-    val srcDir = root.resolve("src").toString
-    val synDir = root.resolve("synopsis").toString
-    val ckpt = root.resolve("ckpt").toString
-    val schema = batch1.toDF("id", "v").schema
-    // an empty store reads as an empty histogram, never an inference
-    // failure
-    assert(SynopsisStream.histogram(spark, synDir, ckpt).isEmpty)
-    def runOnce(): Unit = {
-      val q = SynopsisStream.runAvailableNow(
-        SynopsisStream.readValues(spark, srcDir, schema), "v", synDir,
-        ckpt)
-      q.awaitTermination(60000)
-    }
-    batch1.toDF("id", "v").coalesce(1).write.mode("append").parquet(srcDir)
-    runOnce()
-    // kill-and-restart: a FRESH query from the same checkpoint sees
-    // only the second file
-    batch2.toDF("id", "v").coalesce(1).write.mode("append").parquet(srcDir)
-    runOnce()
-    def buckets(hist: org.apache.spark.sql.DataFrame) = {
-      val (grid, freqs) =
-        graft.operators.Stats.equiRankGridFreqs(hist, 8)
-      val gv = grid.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      graft.operators.Stats.vOptimalDp(freqs, g = 8, k = 3)
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2),
-          gv(r.getInt(2)), r.getLong(3), r.getDouble(4))).sortBy(_._1)
-        .toSeq
-    }
-    val streamed = buckets(SynopsisStream.histogram(spark, synDir,
-      ckpt))
-    val direct = buckets((batch1 ++ batch2).toDF("id", "v")
-      .groupBy(col("v")).agg(count(lit(1)).as("c")))
-    assert(streamed.nonEmpty && streamed == direct)
-    // crash replay of the LAST batch: its partition is rewritten with
-    // identical content, the merged histogram is unchanged
-    def histSet() = SynopsisStream.histogram(spark, synDir, ckpt)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val before = histSet()
-    val lastId = spark.read.parquet(synDir)
-      .agg(max(col("batch_id").cast("long"))).collect()(0).getLong(0)
-    SynopsisStream.processBatch(batch2.toDF("id", "v"), lastId, "v",
-      synDir)
-    assert(histSet() == before, "replay changed the merged synopsis")
-    // committed-only visibility: an in-flight partial (written, not in
-    // the commit log yet) is excluded from the front door and visible
-    // only to the explicit Uncommitted escape
-    SynopsisStream.processBatch(batch2.toDF("id", "v"), lastId + 5, "v",
-      synDir)
-    assert(histSet() == before, "front door saw the in-flight batch")
-    assert(SynopsisStream.histogramUncommitted(spark, synDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet != before,
-      "the uncommitted escape must see the in-flight partial")
-    // the committed-prefix cut must be PARTITION PRUNING, not a
-    // post-scan filter: batch_id is the store's partition column, so at
-    // scale the reader opens only committed partitions' files — an
-    // uncommitted (or compaction-pending) batch costs zero I/O
-    val phys = SynopsisStream.histogram(spark, synDir, ckpt)
-      .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*batch_id".r.findFirstIn(phys)
-      .nonEmpty, phys.take(2000))
-  }
-
-  test("FreqItemsStream: heavy-hitter partials across a kill-and-restart " +
-      "reproduce the q309 bracket exactly, a crash-replayed batch " +
-      "rewrites only itself, and a committed-only read excludes an " +
-      "in-flight batch") {
-    // the streaming maintenance face of the frequent-items synopsis
-    // regime (q309): per batch only the new documents are tokenized into
-    // a (shard, tok, c) partial; the merge-on-read is the exact
-    // associative Σc fold, and the k-with-threshold summary is the SAME
-    // Stats.heavyHitterBracket the batch query runs — so three drops
-    // with a restart in between must match the batch oracle bit-for-bit.
-    val s = spark
-    import s.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    import graft.streaming.FreqItemsStream
-    val dir = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val root = Files.createTempDirectory("graft-freqitems-stream")
-    val dropDir = root.resolve("drop").toString
-    val countsDir = root.resolve("counts").toString
-    val ckpt = root.resolve("ckpt").toString
-    def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = root.resolve(s"tmp_$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val f = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      new java.io.File(dropDir).mkdirs()
-      java.nio.file.Files.move(f.toPath,
-        java.nio.file.Paths.get(dropDir, s"$name.parquet"))
-    }
-    def runOnce(): Unit = {
-      val q = FreqItemsStream.runAvailableNow(
-        FreqItemsStream.readDocs(spark, dropDir, docs.schema),
-        "doc_id", "text", nShards = 4, countsDir, ckpt)
-      q.awaitTermination(120000)
-    }
-    // an empty store reads as an empty frame, never an inference failure
-    assert(FreqItemsStream.mergedCounts(spark, countsDir, ckpt).isEmpty)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getBoolean(4), r.getDouble(5))).toSeq
-    drop(docs.filter(col("doc_id") % 3 === 0), "b0")
-    runOnce()
-    drop(docs.filter(col("doc_id") % 3 === 1), "b1")
-    runOnce()
-    // the kill-and-restart: a FRESH query from the same checkpoint
-    // picks up only the third file
-    drop(docs.filter(col("doc_id") % 3 === 2), "b2")
-    runOnce()
-    val streamed = rows(FreqItemsStream.summary(spark, countsDir, ckpt))
-    val oracle = rows(SparkEntry.queries("q309_heavyhitter_merge")(
-      spark, dir))
-    assert(streamed.nonEmpty && streamed == oracle,
-      s"streamed=${streamed.take(3)} oracle=${oracle.take(3)}")
-    // crash replay of the LAST batch: its partition is rewritten with
-    // identical content, the merged summary is unchanged
-    val lastId = spark.read.parquet(countsDir)
-      .agg(max(col("batch_id").cast("long"))).collect()(0).getLong(0)
-    FreqItemsStream.processBatch(docs.filter(col("doc_id") % 3 === 2),
-      lastId, "doc_id", "text", nShards = 4, countsDir)
-    assert(rows(FreqItemsStream.summary(spark, countsDir, ckpt))
-      == oracle, "replay changed the merged summary")
-    // committed-only visibility (the read-during-drain contract): an
-    // in-flight batch — written but not yet in the checkpoint's commit
-    // log — is visible to the raw read and EXCLUDED from the
-    // checkpoint-filtered one
-    val commits = graft.streaming.Commits.lastCommitted(spark, ckpt)
-    assert(commits.contains(lastId), s"commit log says $commits")
-    FreqItemsStream.processBatch(docs.filter(col("doc_id") % 3 === 2),
-      lastId + 5, "doc_id", "text", nShards = 4, countsDir)
-    assert(rows(FreqItemsStream.summary(spark, countsDir, ckpt))
-      == oracle, "committed-only read saw the uncommitted batch")
-    assert(rows(FreqItemsStream.summaryUncommitted(spark, countsDir))
-      != oracle,
-      "the uncommitted escape should see the in-flight batch")
-  }
-
-  test("FertilityStream: fertility partials across a kill-and-restart " +
-      "reproduce the q322 drift bracket exactly, a crash-replayed batch " +
-      "rewrites only itself, and a committed-only read excludes an " +
-      "in-flight batch") {
-    // the streaming maintenance face of the tokenizer-fertility monitor
-    // (q322): per batch only the new documents are tokenized into a
-    // (lang, source, toks, chars) integer partial; the merge-on-read is
-    // the exact associative sum fold, and the drift summary is the SAME
-    // TextAnalysis.fertilityBracket the batch query runs — so three
-    // drops with a restart in between must match the batch oracle
-    // bit-for-bit.
-    val s = spark
-    import s.implicits._
-    import graft.streaming.FertilityStream
-    val dir = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    val root = Files.createTempDirectory("graft-fertility-stream")
-    val dropDir = root.resolve("drop").toString
-    val partialsDir = root.resolve("partials").toString
-    val ckpt = root.resolve("ckpt").toString
-    def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = root.resolve(s"tmp_$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val f = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      new java.io.File(dropDir).mkdirs()
-      java.nio.file.Files.move(f.toPath,
-        java.nio.file.Paths.get(dropDir, s"$name.parquet"))
-    }
-    def runOnce(): Unit = {
-      val q = FertilityStream.runAvailableNow(
-        FertilityStream.readDocs(spark, dropDir, docs.schema),
-        "text", partialsDir, ckpt)
-      q.awaitTermination(120000)
-    }
-    // an empty store reads as an empty frame, never an inference failure
-    assert(FertilityStream.mergedPartials(spark, partialsDir, ckpt)
-      .isEmpty)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1),
-        r.getLong(2), r.getLong(3), r.getDouble(4), r.getDouble(5),
-        r.getDouble(6), r.getBoolean(7))).toSeq
-    drop(docs.filter(col("doc_id") % 3 === 0), "b0")
-    runOnce()
-    drop(docs.filter(col("doc_id") % 3 === 1), "b1")
-    runOnce()
-    // the kill-and-restart: a FRESH query from the same checkpoint
-    // picks up only the third file
-    drop(docs.filter(col("doc_id") % 3 === 2), "b2")
-    runOnce()
-    val streamed = rows(FertilityStream.summary(spark, partialsDir, ckpt))
-    val oracle = rows(SparkEntry.queries("q322_fertility_drift")(
-      spark, dir))
-    assert(streamed.nonEmpty && streamed == oracle,
-      s"streamed=${streamed.take(3)} oracle=${oracle.take(3)}")
-    // crash replay of the LAST batch: its partition is rewritten with
-    // identical content, the merged summary is unchanged
-    val lastId = spark.read.parquet(partialsDir)
-      .agg(max(col("batch_id").cast("long"))).collect()(0).getLong(0)
-    FertilityStream.processBatch(docs.filter(col("doc_id") % 3 === 2),
-      lastId, "text", partialsDir)
-    assert(rows(FertilityStream.summary(spark, partialsDir, ckpt))
-      == oracle, "replay changed the merged summary")
-    // committed-only visibility (the read-during-drain contract): an
-    // in-flight batch — written but not yet in the checkpoint's commit
-    // log — is visible to the raw read and EXCLUDED from the
-    // checkpoint-filtered one
-    val commits = graft.streaming.Commits.lastCommitted(spark, ckpt)
-    assert(commits.contains(lastId), s"commit log says $commits")
-    FertilityStream.processBatch(docs.filter(col("doc_id") % 3 === 2),
-      lastId + 5, "text", partialsDir)
-    assert(rows(FertilityStream.summary(spark, partialsDir, ckpt))
-      == oracle, "committed-only read saw the uncommitted batch")
-    assert(rows(FertilityStream.summaryUncommitted(spark, partialsDir))
-      != oracle,
-      "the uncommitted escape should see the in-flight batch")
-    // the committed-prefix cut reaches the scan as a PARTITION filter —
-    // pruned at planning, not a post-scan predicate
-    val phys = FertilityStream.mergedPartials(spark, partialsDir, ckpt)
-      .queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*batch_id".r.findFirstIn(phys)
-      .nonEmpty, phys.take(2000))
-  }
-
-  test("AnnIndexStream: per-batch IVF-PQ index rows across a " +
-      "kill-and-restart search bit-identically to the batch-built " +
-      "index, and a crash-replayed batch rewrites only itself") {
-    // the retrieval-index T1-T5 front door: ivfPqIndex is a pure
-    // map-side projection against FIXED seeds/codebooks, so per-batch
-    // partitions union into exactly the batch-built index — no merge
-    // step, no read-modify-write state
-    val s = spark
-    import s.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    import graft.streaming.AnnIndexStream
-    val dir = "/root/testdata/sf0.001"
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val seeds = emb.filter(col("vec_id") < 8)
-    val codebooks = graft.operators.Similarity
-      .trainPqCodebooks(emb, m = 8, ksub = 32, iters = 3)
-    val queries = emb.filter(col("vec_id") < 20)
-    val root = Files.createTempDirectory("graft-annindex-stream")
-    val dropDir = root.resolve("drop").toString
-    val idxDir = root.resolve("index").toString
-    val ckpt = root.resolve("ckpt").toString
-    def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = root.resolve(s"tmp_$name").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val f = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      new java.io.File(dropDir).mkdirs()
-      java.nio.file.Files.move(f.toPath,
-        java.nio.file.Paths.get(dropDir, s"$name.parquet"))
-    }
-    def runOnce(): Unit = {
-      val q = AnnIndexStream.runAvailableNow(
-        AnnIndexStream.readVectors(spark, dropDir, emb.schema),
-        seeds, codebooks, idxDir, ckpt)
-      q.awaitTermination(120000)
-    }
-    // an empty store reads as an empty index, never an inference failure
-    assert(AnnIndexStream.index(spark, idxDir, ckpt).isEmpty)
-    def hits(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getDouble(2), r.getInt(3))).toSet
-    drop(emb.filter(col("vec_id") % 3 === 0), "b0")
-    runOnce()
-    drop(emb.filter(col("vec_id") % 3 === 1), "b1")
-    runOnce()
-    // the kill-and-restart: a FRESH query from the same checkpoint
-    // picks up only the third file
-    drop(emb.filter(col("vec_id") % 3 === 2), "b2")
-    runOnce()
-    val streamed = hits(AnnIndexStream.search(spark, idxDir, ckpt,
-      queries, seeds, codebooks, k = 5, nprobe = 2))
-    val batch = hits(graft.operators.Similarity.ivfPqSearch(
-      graft.operators.Similarity.ivfPqIndex(emb, seeds, codebooks),
-      queries, seeds, codebooks, k = 5, nprobe = 2))
-    assert(streamed.nonEmpty && streamed == batch,
-      s"streamed=${streamed.size} batch=${batch.size}")
-    // crash replay of the LAST batch: identical rewrite, search unchanged
-    val lastId = spark.read.parquet(idxDir)
-      .agg(max(col("batch_id").cast("long"))).collect()(0).getLong(0)
-    AnnIndexStream.processBatch(emb.filter(col("vec_id") % 3 === 2),
-      lastId, seeds, codebooks, idxDir)
-    assert(hits(AnnIndexStream.search(spark, idxDir, ckpt, queries,
-      seeds, codebooks, k = 5, nprobe = 2)) == batch,
-      "replay changed the search results")
-    // committed-only visibility: an in-flight index partition is
-    // excluded from the front-door search and visible only to the
-    // explicit Uncommitted escape
-    AnnIndexStream.processBatch(emb.filter(col("vec_id") % 3 === 2),
-      lastId + 5, seeds, codebooks, idxDir)
-    assert(hits(AnnIndexStream.search(spark, idxDir, ckpt, queries,
-      seeds, codebooks, k = 5, nprobe = 2)) == batch,
-      "front door saw the in-flight batch")
-    assert(AnnIndexStream.indexUncommitted(spark, idxDir).count()
-      > AnnIndexStream.index(spark, idxDir, ckpt).count(),
-      "the uncommitted escape must see the in-flight rows")
-  }
-
   test("streaming ANALYZE refresh: per-batch value histograms folded " +
       "into a persisted synopsis give the batch V-optimal construction") {
     // the q305 merge's streaming face: each micro-batch ships only its

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 
 import graft.schema.Field
 import graft.service.{ExportService, ServiceConfig}
-import graft.sinks.{BigQueryParquetWarehouse, HadoopStorage, ParquetWarehouse, StorageSyncPoint, Warehouse}
+import graft.sinks.{BigQueryParquetWarehouse, HadoopStorage, JdbcWarehouse, ParquetWarehouse, StorageSyncPoint, Warehouse}
 import graft.sources.LocalFixtureSource
 
 /** The Parquet warehouse's sync point: one [[StorageSyncPoint]] object,
@@ -21,13 +21,14 @@ class SyncPointSpec extends SparkSpec {
   /** 1 h windows from 06:00 through 09:00 are mature. */
   private val frozenNow = Instant.parse("2020-08-28T09:00:00Z")
 
-  /** Two records on 08-27, in the first window and in the third; neither
-    * on a window boundary, and neither window starts a day. */
-  private def writeFixture(dir: Path): String = {
+  /** By default two records on 08-27, in the first window and in the
+    * third; neither on a window boundary, and neither window starts a day. */
+  private def writeFixture(dir: Path, records: Seq[(String, Int)] = Seq(
+      "2020-08-27T06:20:26.900Z" -> 100, "2020-08-27T08:30:00Z" -> 200))
+      : String = {
     val f = dir.resolve("raw.json")
-    Files.writeString(f, Seq(
-      """{"EventStart": "2020-08-27T06:20:26.900Z", "UserId": 100}""",
-      """{"EventStart": "2020-08-27T08:30:00Z", "UserId": 200}""")
+    Files.writeString(f, records.map { case (start, user) =>
+      s"""{"EventStart": "$start", "UserId": $user}""" }
       .mkString("[", ",\n", "]"))
     f.toString
   }
@@ -42,27 +43,62 @@ class SyncPointSpec extends SparkSpec {
   private def userIds(wh: ParquetWarehouse): Seq[String] =
     wh.readTable().select("UserId").collect().map(_.getString(0)).toSeq.sorted
 
-  test("a retried window is loaded once: the loop heals before each retry") {
-    val tmp = Files.createTempDirectory("graft-sync-retry")
-    writeFixture(tmp)
-    val wh = new ParquetWarehouse(spark, tmp.resolve("wh").toString)
-    // the commit of the first window and of the third fails once each,
-    // after the window's rows were appended
-    val failing = Set("2020-08-27T07:00:00Z", "2020-08-27T09:00:00Z")
-      .map(Instant.parse)
-    val failed = scala.collection.mutable.Set[Instant]()
-    val flaky = new ForwardingWarehouse(wh) {
-      override def saveSyncPoint(bundleEnd: Instant): Unit =
-        if (failing(bundleEnd) && failed.add(bundleEnd))
-          throw new java.io.IOException(s"commit of $bundleEnd failed")
-        else super.saveSyncPoint(bundleEnd)
+  /** A warehouse of recovery flavor `name` under `tmp`, with a reader of
+    * its loaded UserIds. Parquet and Derby/JDBC heal by deleting orphans;
+    * the BigQuery flavor rewinds to the day start. */
+  private def flavor(name: String, tmp: Path): (Warehouse, () => Seq[String]) =
+    name match {
+      case "parquet" =>
+        val wh = new ParquetWarehouse(spark, tmp.resolve("wh").toString)
+        (wh, () => userIds(wh))
+      case "bigquery" =>
+        val wh = new BigQueryParquetWarehouse(spark, tmp.resolve("wh").toString)
+        (wh, () => userIds(wh))
+      case "jdbc" =>
+        val url = s"jdbc:derby:${tmp.resolve("db")};create=true"
+        (new JdbcWarehouse(spark, url), () => spark.read
+          .jdbc(url, "\"export\"", new java.util.Properties())
+          .select(col("UserId").cast("string")).collect()
+          .map(_.getString(0)).toSeq.sorted)
     }
-    val bundles = service(tmp, flaky).runUntilCaughtUp(maxBundles = 20)
-    assert(failed == failing)
-    assert(bundles.map(_.start) == (0 until 3).map(h =>
-      startTime.plus(Duration.ofHours(h))))
-    assert(userIds(wh) == Seq("100", "200"))
-    assert(wh.lastSyncPoint().contains(Instant.parse("2020-08-27T09:00:00Z")))
+
+  test("a retried window is loaded once: the loop heals before each retry") {
+    // each input: its records, the window ends whose commit fails once
+    // after the window's rows were appended, and the flavors it runs on
+    val cases = Seq(
+      // the first window and the third; the BigQuery flavor cannot heal a
+      // first window, which has no sync point to rewind from
+      (Seq("2020-08-27T06:20:26.900Z" -> 100, "2020-08-27T08:30:00Z" -> 200),
+        Set("2020-08-27T07:00:00Z", "2020-08-27T09:00:00Z"),
+        Seq("parquet")),
+      // a window whose only row sits exactly at its start, which is the
+      // committed sync point: a heal that keeps `EventStart == sync`
+      // loads that row twice
+      (Seq("2020-08-27T07:00:00Z" -> 300), Set("2020-08-27T08:00:00Z"),
+        Seq("parquet", "bigquery", "jdbc")))
+    val lastEnd = Instant.parse("2020-08-27T09:00:00Z")
+    for ((records, failingAt, names) <- cases; name <- names) {
+      val tmp = Files.createTempDirectory("graft-sync-retry")
+      writeFixture(tmp, records)
+      val (wh, loadedIds) = flavor(name, tmp)
+      val failing = failingAt.map(Instant.parse)
+      val failed = scala.collection.mutable.Set[Instant]()
+      val flaky = new ForwardingWarehouse(wh) {
+        override def saveSyncPoint(bundleEnd: Instant): Unit =
+          if (failing(bundleEnd) && failed.add(bundleEnd))
+            throw new java.io.IOException(s"commit of $bundleEnd failed")
+          else super.saveSyncPoint(bundleEnd)
+      }
+      val bundles = service(tmp, flaky).runUntilCaughtUp(maxBundles = 40)
+      val clue = s"$records on $name"
+      assert(failed == failing, clue)
+      assert(loadedIds() == records.map(_._2.toString).sorted, clue)
+      assert(bundles.last.end == lastEnd, clue)
+      assert(wh.lastSyncPoint().contains(lastEnd), clue)
+      if (name != "bigquery") // no rewind: each window is exported once
+        assert(bundles.map(_.start) == (0 until 3).map(h =>
+          startTime.plus(Duration.ofHours(h))), clue)
+    }
   }
 
   test("recover keeps a row whose EventStart does not parse and drops the orphan") {

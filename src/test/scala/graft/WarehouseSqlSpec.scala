@@ -43,11 +43,6 @@ class WarehouseSqlSpec extends AnyFunSuite {
     val copy = RedshiftSql.copyFrom(None, "export", "s3://b/1598486400.csv", "c")
     assert(copy.contains("FORMAT AS CSV IGNOREHEADER 1 ACCEPTINVCHARS"))
     val del = RedshiftSql.deleteOrphans(None, "export", "2020-08-31T00:00:00Z")
-    assert(del == "DELETE FROM \"export\" WHERE EventStart > '2020-08-31T00:00:00Z'")
-  }
-
-  test("BigQuery day-partition decorator") {
-    assert(BigQuerySql.partitionDecorator("export",
-      java.time.LocalDate.parse("2020-08-27")) == "export$20200827")
+    assert(del == "DELETE FROM \"export\" WHERE EventStart >= '2020-08-31T00:00:00Z'")
   }
 }

@@ -33,6 +33,11 @@ import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
   * match; the merge path would sum every duplicate) — unreachable for
   * maps, like the tf maps, built by map_from_entries over a grouped
   * aggregate.
+  *
+  * Keys compare with `UTF8String.binaryCompare`, the UTF-8 byte order
+  * `compareTo` delegates to: `compareTo` first asks the environment
+  * whether Spark is under test (a `getenv` and a `getProperty` per call)
+  * and refuses to run when it is.
   */
 case class MapMinSum(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
@@ -71,12 +76,12 @@ case class MapMinSum(left: Expression, right: Expression)
     while (sorted && i < na && j < nb) {
       val ka = ak.getUTF8String(i)
       val kb = bk.getUTF8String(j)
-      if ((prevA ne null) && (i > 0) && ka.compareTo(prevA) <= 0)
+      if ((prevA ne null) && (i > 0) && ka.binaryCompare(prevA) <= 0)
         sorted = false
-      else if ((prevB ne null) && (j > 0) && kb.compareTo(prevB) <= 0)
+      else if ((prevB ne null) && (j > 0) && kb.binaryCompare(prevB) <= 0)
         sorted = false
       else {
-        val c = ka.compareTo(kb)
+        val c = ka.binaryCompare(kb)
         if (c == 0) {
           if (!av.isNullAt(i) && !bv.isNullAt(j))
             sum += math.min(av.getLong(i), bv.getLong(j))
@@ -89,12 +94,12 @@ case class MapMinSum(left: Expression, right: Expression)
     // verify the unconsumed tails' ordering too before trusting the merge
     while (sorted && i < na) {
       val ka = ak.getUTF8String(i)
-      if ((prevA ne null) && ka.compareTo(prevA) <= 0) sorted = false
+      if ((prevA ne null) && ka.binaryCompare(prevA) <= 0) sorted = false
       else { prevA = ka; i += 1 }
     }
     while (sorted && j < nb) {
       val kb = bk.getUTF8String(j)
-      if ((prevB ne null) && kb.compareTo(prevB) <= 0) sorted = false
+      if ((prevB ne null) && kb.binaryCompare(prevB) <= 0) sorted = false
       else { prevB = kb; j += 1 }
     }
     if (sorted) sum else quadratic(ma, mb)

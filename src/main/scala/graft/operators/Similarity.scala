@@ -493,24 +493,19 @@ object Similarity {
         round(col("hsim"), 6).as("sim"), col("hrk").as("rk"))
   }
 
-  /** IVF-PQ: the production large-scale ANN architecture (coarse inverted
-    * file × product quantization, the FAISS IVFPQ shape). The index is one
-    * row per corpus vector — (cell_id, m PQ codes), ~8 + m bytes — built
-    * in a single map-side projection and pinned via `mat` (persist it with
-    * `Materializer.Persisted` and every later search touches neither the
-    * float vectors nor the assignment kernels). A query probes its
-    * `nprobe` nearest coarse cells (an equi-join on cell id, so per-query
-    * work is the probed cells' population, not the corpus) and scores
-    * candidates with the native one-pass ADC kernel against its lookup
-    * tables. Recall knobs: nprobe (coarse) × codebook size (fine). */
-  /** The IVF-PQ INDEX of a corpus — one row per vector,
-    * (neighbor_id, cell_id, codes), ~8 + m bytes each — built in a single
+  /** The IVF-PQ INDEX of a corpus: coarse inverted file × product
+    * quantization, the FAISS IVFPQ shape. One row per vector,
+    * (neighbor_id, cell_id, codes), ~8 + m bytes each, built in a single
     * map-side projection (coarse cell + PQ codes, both codegen'd argmax
     * against foldable literals). This is the durable artifact a 100 TB
     * pipeline builds once and persists (parquet via
     * [[Materializer.Persisted]]); every later [[ivfPqSearch]] reads
     * (cell_id, codes) off disk and touches neither the float vectors nor
-    * the assignment kernels. */
+    * the assignment kernels. A query probes its `nprobe` nearest coarse
+    * cells (an equi-join on cell id, so per-query work is the probed
+    * cells' population, not the corpus) and scores candidates with the
+    * native one-pass ADC kernel against its lookup tables. Recall knobs:
+    * nprobe (coarse) × codebook size (fine). */
   def ivfPqIndex(corpus: DataFrame, seeds: DataFrame,
                  codebooks: Array[Array[Array[Float]]],
                  idCol: String = "vec_id", vecCol: String = "embedding")

@@ -13,6 +13,12 @@ import org.apache.spark.sql.DataFrame
   */
 object CsvStage {
 
+  /** The Hadoop committer option that writes a `_SUCCESS` marker. The
+    * bundle writes set it to false: nothing reads their markers, and each
+    * costs file-permission calls that, without native Hadoop, launch
+    * processes. */
+  val MarkSuccess = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+
   private def hadoopFs(p: Path, conf: Configuration): FileSystem =
     p.getFileSystem(conf)
 
@@ -28,6 +34,7 @@ object CsvStage {
       .option("header", "true")
       .option("escape", "\"")     // RFC4180: "" not \"
       .option("emptyValue", "")   // absent fields -> empty cell, not ""
+      .option(MarkSuccess, "false")
       .mode("overwrite")
       .csv(tmp)
     val tmpPath = new Path(tmp)

@@ -119,25 +119,34 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
 
   override def loadToWarehouse(csvRef: String, bundleStart: Instant,
                                truncateDay: Boolean): Unit = {
+    val dayDir = s"$dataPath/day=${dayOf(bundleStart)}"
+    // WriteTruncate, also of an empty bundle (an overwrite of no rows would not)
+    if (truncateDay) dataFs.delete(new Path(dayDir), true)
+    readStaged(csvRef).write.mode(SaveMode.Append)
+      .option(CsvStage.MarkSuccess, "false")
+      .parquet(dayDir)
+  }
+
+  /** One staged CSV bundle as table rows: the live columns, in order, one
+    * projection with every null (a column the staged file predates, under
+    * append-only evolution, or an empty cell) empty-filled. */
+  def readStaged(csvRef: String): DataFrame = {
     val cols = getExportTableColumns()
     // Explicit all-string schema: never infer (an empty bundle stages an
     // empty file, which has no header row to infer from).
     val stagedSchema = org.apache.spark.sql.types.StructType(cols.map(c =>
       org.apache.spark.sql.types.StructField(c,
         org.apache.spark.sql.types.StringType)))
-    val staged = spark.read
+    // multiLine: the parser reads the file as one stream instead of once
+    // per line, where it ends every line by throwing an EOF. A staged cell
+    // holds no raw line break (strings are sanitized, custom vars are
+    // JSON), so both read the same records.
+    spark.read
       .option("header", "true").option("escape", "\"")
+      .option("multiLine", "true")
       .schema(stagedSchema)
       .csv(csvRef)
-    // null-fill columns the staged file predates (append-only evolution)
-    val aligned = staged.select(cols.map(c =>
-      (if (staged.columns.contains(c)) col(c) else lit(null).cast("string"))
-        .as(c)): _*)
-      .na.fill("", cols.toArray)
-      .withColumn("day", lit(dayOf(bundleStart)))
-    // WriteTruncate, also of an empty bundle (an overwrite of no rows would not)
-    if (truncateDay) dataFs.delete(new Path(s"$dataPath/day=${dayOf(bundleStart)}"), true)
-    aligned.write.mode(SaveMode.Append).partitionBy("day").parquet(dataPath)
+      .select(cols.map(c => coalesce(col(c), lit("")).as(c)): _*)
   }
 
   def readTable(): DataFrame = spark.read.parquet(dataPath)

@@ -7,15 +7,16 @@ import org.apache.spark.sql.types._
 import graft.schema.Field
 
 /** SQL generation for warehouse targets — the statement-building half of
-  * the reference's Redshift/BigQuery connectors, kept pure so it is
-  * testable without a live warehouse. Execution is [[JdbcWarehouse]] (a
+  * the reference's Redshift connector, kept pure so it is testable without
+  * a live warehouse. Execution is [[JdbcWarehouse]] (a
   * stage-then-COPY sink: `CsvStage` writes the object, these statements
   * load it).
   *
   * The dialect trait carries the statement SHAPES (create / alter / delete
   * / max), shared across targets; each object binds the target's type map
-  * and literal syntax (reference: warehouse/redshift.go:24-31 vs
-  * warehouse/bigquery.go:16-23 differ in exactly those two axes).
+  * and literal syntax (reference: warehouse/redshift.go:24-31). The
+  * BigQuery flavor loads Parquet ([[BigQueryParquetWarehouse]]) and
+  * generates no SQL.
   */
 trait WarehouseSqlDialect {
 
@@ -141,18 +142,4 @@ object DerbySql extends WarehouseSqlDialect {
 
   override def timestampLiteral(t: Instant): String =
     s"{ts '${fmt.format(t)}'}"
-}
-
-object BigQuerySql {
-
-  /** Type map (reference: warehouse/bigquery.go:16-23). */
-  def ddlType(dt: DataType): String = dt match {
-    case LongType | IntegerType => "INTEGER"
-    case DoubleType => "FLOAT"
-    case StringType => "STRING"
-    case TimestampType => "TIMESTAMP"
-    case NullType => "STRING"
-    case other => throw new IllegalArgumentException(
-      s"no BigQuery mapping for ${other.catalogString}")
-  }
 }

@@ -5,10 +5,11 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.core.JsonToken
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -205,8 +206,7 @@ private[sources] class ExportScan(path: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ExportReaderFactory(required, lo, hi,
-      new SerializableConfiguration(hadoopConf))
+    ExportReaderFactory(required, lo, hi, hadoopConf)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -295,8 +295,7 @@ private[sources] class ExportMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ExportReaderFactory(required, lo, hi,
-      new SerializableConfiguration(hadoopConf))
+    ExportReaderFactory(required, lo, hi, hadoopConf)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -305,35 +304,66 @@ private[sources] class ExportMicroBatchStream(
 private[sources] case class ExportInputPartition(file: String)
     extends InputPartition
 
-private[sources] class ExportReaderFactory(required: StructType,
-                                           lo: Option[(Instant, Boolean)],
-                                           hi: Option[(Instant, Boolean)],
-                                           conf: SerializableConfiguration)
+/** Opens one [[ExportPartitionReader]] per bundle file. The Hadoop
+  * configuration travels as one broadcast per scan, as Spark's own file
+  * scans send it, instead of inside every task. */
+private[sources] class ExportReaderFactory(
+    required: StructType, lo: Option[(Instant, Boolean)],
+    hi: Option[(Instant, Boolean)],
+    conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new ExportPartitionReader(partition.asInstanceOf[ExportInputPartition].file,
-      required, lo, hi, conf.value)
+      required, lo, hi, conf.value.value)
 }
 
-/** Streams one JSON bundle file with a token-level Jackson parser: O(one
-  * record) executor memory regardless of bundle size, never the whole file.
-  * Matches the reference's `json.Decoder` loop (internal/service.go:183-211):
+private[sources] object ExportReaderFactory {
+  def apply(required: StructType, lo: Option[(Instant, Boolean)],
+            hi: Option[(Instant, Boolean)],
+            hadoopConf: Configuration): ExportReaderFactory =
+    new ExportReaderFactory(required, lo, hi,
+      SparkSession.active.sparkContext.broadcast(
+        new SerializableConfiguration(hadoopConf)))
+}
+
+/** Streams one JSON bundle file with a token-level Jackson parser, writing
+  * each record's tokens straight into the row: O(one record) executor
+  * memory regardless of bundle size, and no `JsonNode` tree per record.
+  * Matches the reference's `json.Decoder` loop
+  * (internal/service.go:183-211):
   *   - array framing / JSON syntax errors abort the bundle (the reference
   *     returns the decode error);
-  *   - a record that fails the TRANSFORM is skipped and the loop continues
-  *     (reference "Failed object transform, skipping record");
-  *   - non-object array elements are skipped too (lenient divergence: Go's
+  *   - non-object array elements are skipped (lenient divergence: Go's
   *     `Decode(&map)` would abort; a scalar element carries no record data
   *     either way).
   * A bundle that starts with the gzip magic bytes is decompressed inline,
   * whatever its name, as the live wire format is gzipped JSON (reference:
-  * client/export.go download Content-Encoding). */
+  * client/export.go download Content-Encoding).
+  *
+  * Per record:
+  *   - a key is matched to its column through a table keyed by the raw
+  *     key, filled on first sight from the exact name, else the lowercased
+  *     one (case-insensitive, internal/service.go:77-96);
+  *   - a string, integer or float token of the column's own type is
+  *     converted in place; timestamps in the canonical
+  *     `YYYY-MM-DDTHH:MM:SS[.f]Z` form by a hand-written parser, any
+  *     other form by `Instant.parse` (unparseable: null). Any other token
+  *     shape is read as a tree and converted by the rules of
+  *     [[ExportPartitionReader.cast]];
+  *   - custom vars keep their key case and JSON form, re-emitted through
+  *     one reused generator;
+  *   - repeated keys resolve as a JSON object tree resolves them: a key's
+  *     last value wins, and among keys that differ only in case, the one
+  *     first seen latest.
+  * Rows equal those of the former tree decoder; a differential test pins
+  * the two against each other. */
 private[sources] class ExportPartitionReader(
     file: String, required: StructType,
     lo: Option[(Instant, Boolean)], hi: Option[(Instant, Boolean)],
     conf: Configuration)
     extends PartitionReader[InternalRow] {
+  import ExportPartitionReader._
 
   private val mapper = new ObjectMapper()
   private val parser = {
@@ -363,27 +393,11 @@ private[sources] class ExportPartitionReader(
     }
   }
 
-  private var current: InternalRow = _
-
-  private def inRange(t: Instant): Boolean = {
-    val okLo = lo.forall { case (b, incl) =>
-      if (incl) !t.isBefore(b) else t.isAfter(b) }
-    val okHi = hi.forall { case (b, incl) =>
-      if (incl) !t.isAfter(b) else t.isBefore(b) }
-    okLo && okHi
-  }
-
-  private def toMicros(t: Instant): Long =
-    Math.addExact(Math.multiplyExact(t.getEpochSecond, 1000000L),
-      t.getNano / 1000L)
-
   private val timeGated = lo.isDefined || hi.isDefined
 
-  // hoisted out of convert(): this is the innermost loop of the scan.
   // Every canonical field, lowercased, maps to its ordinal in `required`,
   // or to Pruned when the scan does not need it; a key with no entry is a
   // custom var.
-  private val Pruned = -1
   private val ordinals: Map[String, Int] = {
     val byName = required.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
     ExportDataSource.schema.fieldNames.map { n =>
@@ -392,40 +406,303 @@ private[sources] class ExportPartitionReader(
     }.toMap
   }
   private val types = required.fields.map(_.dataType)
+  private val kinds = types.map {
+    case StringType => KString
+    case LongType => KLong
+    case IntegerType => KInt
+    case DoubleType => KDouble
+    case TimestampType => KTime
+    case _ => KOther
+  }
   private val customOrdinal = ordinals("customvars")
   private val needCustom = customOrdinal != Pruned
 
-  private def convert(node: JsonNode): Option[InternalRow] = {
-    // Event-time pushdown gate — applied ONLY when a bound was actually
-    // pushed. Without a pushed filter, a record with an absent or
-    // unparseable EventStart is KEPT with a null field, matching the
-    // reference's empty-fill (internal/service.go transformExportJSONRecord
-    // fills missing fields rather than dropping the record).
-    if (timeGated) {
-      val evtNode = node.properties().asScala
-        .find(_.getKey.equalsIgnoreCase("EventStart")).map(_.getValue)
-      val evt = evtNode.flatMap(n =>
-        scala.util.Try(Instant.parse(n.asText())).toOption)
-      if (evt.isEmpty || !inRange(evt.get)) return None
-    }
+  /** The raw-key table: each key seen in this bundle, with its column. */
+  private val keys = new java.util.HashMap[String, Key]()
 
-    val values = new Array[Any](required.length)
-    val custom = if (needCustom)
-      new java.util.LinkedHashMap[String, JsonNode]() else null
-
-    node.properties().asScala.foreach { e =>
-      ordinals.get(e.getKey.toLowerCase) match {
-        case Some(i) => if (i != Pruned) values(i) = cast(e.getValue, types(i))
-        case None => if (needCustom) custom.put(e.getKey, e.getValue)
-      }
+  private def keyOf(name: String): Key = {
+    val k = keys.get(name)
+    if (k != null) k
+    else {
+      val slot = ordinals.getOrElse(name.toLowerCase, Custom)
+      val key = Key(slot, name.equalsIgnoreCase("EventStart"))
+      if (keys.size < MaxKeys) keys.put(name, key)
+      key
     }
-    if (needCustom)
-      values(customOrdinal) =
-        UTF8String.fromString(mapper.writeValueAsString(custom))
-    Some(new GenericInternalRow(values))
   }
 
-  private def cast(n: JsonNode, dt: DataType): Any =
+  // Records of one bundle mostly list their keys in one order: the key
+  // met at each position of the last record, checked by identity first
+  // (the parser interns key names), saves the table lookup.
+  private val seenName = new Array[String](MaxPositions)
+  private val seenKey = new Array[Key](MaxPositions)
+
+  private def keyAt(pos: Int, name: String): Key =
+    if (pos >= MaxPositions) keyOf(name)
+    else if (seenName(pos) eq name) seenKey(pos)
+    else {
+      val k = keyOf(name)
+      seenName(pos) = name
+      seenKey(pos) = k
+      k
+    }
+
+  // the row, reused: the scan copies each row into an UnsafeRow
+  private val values = new Array[Any](required.length)
+  private val row = new GenericInternalRow(values)
+  // per record: the key that set each column, and the keys it displaced
+  private val owners = new Array[String](required.length)
+  private var displaced: List[(Int, String)] = Nil
+  private val customs = new java.util.LinkedHashMap[String, String]()
+  private val valueOut = new java.io.CharArrayWriter()
+  private val valueGen = {
+    val g = mapper.getFactory.createGenerator(valueOut)
+    g.setRootValueSeparator(null)
+    g
+  }
+  private val objectOut = new java.io.CharArrayWriter()
+  private val objectGen = {
+    val g = mapper.getFactory.createGenerator(objectOut)
+    g.setRootValueSeparator(null)
+    g
+  }
+
+  // the event-time gate: the first EventStart key (any case) and its time
+  private var gateKey: String = _
+  private var gateOk = false
+  private var gateSec = 0L
+  private var gateNano = 0
+  // the last time parsed by parseTime
+  private var tSec = 0L
+  private var tNano = 0
+
+  private def inRange(sec: Long, nano: Int): Boolean = {
+    def cmp(b: Instant): Int = {
+      val c = java.lang.Long.compare(sec, b.getEpochSecond)
+      if (c != 0) c else Integer.compare(nano, b.getNano)
+    }
+    lo.forall { case (b, incl) => val c = cmp(b); if (incl) c >= 0 else c > 0 } &&
+      hi.forall { case (b, incl) => val c = cmp(b); if (incl) c <= 0 else c < 0 }
+  }
+
+  /** Decode the record whose START_OBJECT is the current token into `row`.
+    * False when the pushed time range drops it. Event-time gate applied
+    * ONLY when a bound was pushed: without one, a record with an absent or
+    * unparseable EventStart is KEPT with a null field, matching the
+    * reference's empty-fill (internal/service.go transformExportJSONRecord
+    * fills missing fields rather than dropping the record). */
+  private def decodeRecord(): Boolean = {
+    java.util.Arrays.fill(values.asInstanceOf[Array[AnyRef]], null)
+    java.util.Arrays.fill(owners.asInstanceOf[Array[AnyRef]], null)
+    displaced = Nil
+    customs.clear()
+    gateKey = null
+    gateOk = false
+    var pos = 0
+    while (parser.nextToken() == JsonToken.FIELD_NAME) {
+      val name = parser.currentName()
+      val key = keyAt(pos, name)
+      pos += 1
+      val tok = parser.nextToken()
+      val slot =
+        if (key.slot >= 0 && key.slot != customOrdinal && claim(key.slot, name))
+          key.slot
+        else Pruned
+      if (timeGated && key.gate && (gateKey == null || gateKey == name)) {
+        gateKey = name
+        gateOk = tok == JsonToken.VALUE_STRING && parseTime()
+        gateSec = tSec
+        gateNano = tNano
+      }
+      if (slot != Pruned) values(slot) = value(tok, slot)
+      else if (key.slot == Custom && needCustom) customs.put(name, customValue(tok))
+      else parser.skipChildren()
+    }
+    if (needCustom) values(customOrdinal) = customJson()
+    !timeGated || (gateOk && inRange(gateSec, gateNano))
+  }
+
+  /** Whether key `name` sets column `slot`: as in a JSON object tree, a
+    * repeated key replaces its own value, and of two keys that differ
+    * only in case, the one first seen later wins. */
+  private def claim(slot: Int, name: String): Boolean = {
+    val owner = owners(slot)
+    if (owner == null || owner == name) { owners(slot) = name; true }
+    else if (displaced.contains((slot, name))) false
+    else {
+      displaced = (slot, owner) :: displaced
+      owners(slot) = name
+      true
+    }
+  }
+
+  private def value(tok: JsonToken, slot: Int): Any = {
+    val kind = kinds(slot)
+    if (tok == JsonToken.VALUE_NULL) null
+    else if (tok == JsonToken.VALUE_STRING && kind == KString) text()
+    else if (tok == JsonToken.VALUE_STRING && kind == KTime)
+      if (parseTime()) toMicros(tSec, tNano) else null
+    else if (tok == JsonToken.VALUE_NUMBER_INT && kind != KString &&
+             kind != KTime && kind != KOther &&
+             parser.getNumberType != JsonParser.NumberType.BIG_INTEGER) {
+      val v = parser.getLongValue
+      if (kind == KLong) v else if (kind == KInt) v.toInt else v.toDouble
+    } else if (tok == JsonToken.VALUE_NUMBER_FLOAT && kind == KDouble)
+      parser.getDoubleValue
+    else cast(mapper.readTree[JsonNode](parser), types(slot))
+  }
+
+  /** One custom var's value in its JSON form: a scalar token copied, a
+    * structure read as a tree (so its own repeated keys resolve) and
+    * written back. */
+  private def customValue(tok: JsonToken): String = {
+    if (tok == JsonToken.START_OBJECT || tok == JsonToken.START_ARRAY)
+      mapper.writeTree(valueGen, mapper.readTree[JsonNode](parser))
+    else valueGen.copyCurrentEvent(parser)
+    valueGen.flush()
+    val s = valueOut.toString
+    valueOut.reset()
+    s
+  }
+
+  private def customJson(): UTF8String = {
+    objectGen.writeStartObject()
+    customs.forEach((k, v) => { objectGen.writeFieldName(k); objectGen.writeRawValue(v) })
+    objectGen.writeEndObject()
+    objectGen.flush()
+    val s = objectOut.toString
+    objectOut.reset()
+    UTF8String.fromString(s)
+  }
+
+  /** The current string token as UTF-8: an ASCII string is copied byte
+    * for byte from the parser's buffer, any other goes through `String`. */
+  private def text(): UTF8String = {
+    val cs = parser.getTextCharacters
+    val off = parser.getTextOffset
+    val n = parser.getTextLength
+    val out = new Array[Byte](n)
+    var i = 0
+    while (i < n) {
+      val c = cs(off + i)
+      if (c >= 0x80) return UTF8String.fromString(new String(cs, off, n))
+      out(i) = c.toByte
+      i += 1
+    }
+    UTF8String.fromBytes(out)
+  }
+
+  /** Parse the current string token as an RFC 3339 instant into
+    * (`tSec`, `tNano`); false when `Instant.parse` would reject it. */
+  private def parseTime(): Boolean = {
+    val cs = parser.getTextCharacters
+    val off = parser.getTextOffset
+    val n = parser.getTextLength
+    if (parseCanonical(cs, off, n)) true
+    else try {
+      val i = Instant.parse(new String(cs, off, n))
+      tSec = i.getEpochSecond
+      tNano = i.getNano
+      true
+    } catch { case scala.util.control.NonFatal(_) => false }
+  }
+
+  /** The canonical `YYYY-MM-DDTHH:MM:SS[.f{1,9}]Z` form, with every field
+    * in range, in `n` chars of `cs` from `off`; false for anything else,
+    * which `Instant.parse` then decides. */
+  private def parseCanonical(cs: Array[Char], off: Int, n: Int): Boolean = {
+    def at(i: Int): Char = cs(off + i)
+    if (n < 20 || n > 30 || n == 21 || at(n - 1) != 'Z' ||
+        at(4) != '-' || at(7) != '-' || at(10) != 'T' ||
+        at(13) != ':' || at(16) != ':' || (n > 20 && at(19) != '.'))
+      return false
+    def num(from: Int, to: Int): Int = {
+      var v = 0
+      var i = from
+      while (i < to) {
+        val d = at(i) - '0'
+        if (d < 0 || d > 9) return -1
+        v = v * 10 + d
+        i += 1
+      }
+      v
+    }
+    val year = num(0, 4); val month = num(5, 7); val day = num(8, 10)
+    val hour = num(11, 13); val minute = num(14, 16); val second = num(17, 19)
+    val frac = if (n > 20) num(20, n - 1) else 0
+    if (year < 0 || month < 1 || month > 12 || day < 1 || hour < 0 ||
+        hour > 23 || minute < 0 || minute > 59 || second < 0 || second > 59 ||
+        frac < 0 || day > daysInMonth(year, month))
+      return false
+    var nano = frac
+    var k = n - 1 - 20
+    while (k < 9 && n > 20) { nano *= 10; k += 1 }
+    tSec = daysFromCivil(year, month, day) * 86400L +
+      hour * 3600 + minute * 60 + second
+    tNano = nano
+    true
+  }
+
+  override def next(): Boolean = {
+    while (true) {
+      // JsonParseException here = bad framing -> abort the bundle
+      val tok = parser.nextToken()
+      if (tok == null || tok == JsonToken.END_ARRAY) return false
+      if (tok == JsonToken.START_OBJECT) { if (decodeRecord()) return true }
+      else parser.skipChildren() // non-object element -> skip
+    }
+    false
+  }
+
+  override def get(): InternalRow = row
+  override def close(): Unit = parser.close()
+}
+
+private[sources] object ExportPartitionReader {
+  private final case class Key(slot: Int, gate: Boolean)
+  private val Pruned = -1
+  private val Custom = -2
+  // a bundle's distinct keys are its fields and custom var names; the cap
+  // only bounds the table against a bundle of ever-new keys
+  private val MaxKeys = 4096
+  private val MaxPositions = 256
+
+  private val KString = 0
+  private val KLong = 1
+  private val KInt = 2
+  private val KDouble = 3
+  private val KTime = 4
+  private val KOther = 5
+
+  /** Epoch micros of an instant; null when they overflow a long. */
+  private def toMicros(sec: Long, nano: Int): Any =
+    try Math.addExact(Math.multiplyExact(sec, 1000000L), nano / 1000L)
+    catch { case _: ArithmeticException => null }
+
+  private def daysInMonth(year: Int, month: Int): Int =
+    if (month == 2)
+      if (year % 4 == 0 && (year % 100 != 0 || year % 400 == 0)) 29 else 28
+    else if (month == 4 || month == 6 || month == 9 || month == 11) 30
+    else 31
+
+  /** Days since 1970-01-01 of a proleptic Gregorian date (Hinnant). */
+  private def daysFromCivil(year: Int, month: Int, day: Int): Long = {
+    val y = if (month <= 2) year - 1 else year
+    val era = Math.floorDiv(y, 400)
+    val yoe = y - era * 400
+    val mp = (month + 9) % 12
+    val doy = (153 * mp + 2) / 5 + day - 1
+    val doe = yoe * 365 + yoe / 4 - yoe / 100 + doy
+    era * 146097L + doe - 719468L
+  }
+
+  /** A value's column form from its JSON tree: the conversion for token
+    * shapes the streaming path does not convert in place (a string in a
+    * numeric column, a number in a string column, a structure, a big
+    * integer, ...). Numbers follow Jackson's `asLong`/`asInt`/`asDouble`;
+    * a non-string renders as its JSON text; a timestamp that does not
+    * parse is null. */
+  private[sources] def cast(n: JsonNode, dt: DataType): Any =
     if (n == null || n.isNull) null
     else dt match {
       case StringType => UTF8String.fromString(
@@ -434,27 +711,8 @@ private[sources] class ExportPartitionReader(
       case IntegerType => n.asInt()
       case DoubleType => n.asDouble()
       case TimestampType =>
-        scala.util.Try(toMicros(Instant.parse(n.asText()))).getOrElse(null)
+        scala.util.Try(Instant.parse(n.asText())).toOption
+          .map(i => toMicros(i.getEpochSecond, i.getNano)).orNull
       case _ => null
     }
-
-  override def next(): Boolean = {
-    current = null
-    while (current == null) {
-      // JsonParseException here = bad framing -> abort the bundle
-      val tok = parser.nextToken()
-      if (tok == null || tok == JsonToken.END_ARRAY) return false
-      if (tok == JsonToken.START_OBJECT) {
-        // one record subtree in heap at a time; transform failure -> skip
-        val node = mapper.readTree[JsonNode](parser)
-        current = scala.util.Try(convert(node)).toOption.flatten.orNull
-      } else {
-        parser.skipChildren() // non-object element -> skip
-      }
-    }
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = parser.close()
 }

@@ -6,15 +6,20 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumns}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.Sanitize
+import graft.functions.{Sanitize, StagedString}
 import graft.schema.Field
 
 /** Per-sink value rendering strategy (reference: warehouse/warehouse.go:54-71
   * default; warehouse/redshift.go:101-116 Redshift variant). All output is
   * strings — the staging format is CSV.
-  */
+  *
+  * Each staged column is one native [[graft.functions.StagedString]]
+  * expression: it renders the typed value, sanitizes strings, and turns
+  * null into the empty string, in one call per row. No regex and no
+  * datetime pattern is evaluated per row. */
 sealed trait ValueFormat {
-  /** Render one typed column to its staged string form. */
+  /** Render one column, cast to `f`'s type, to its staged string form;
+    * null renders as the empty string. */
   def render(c: Column, f: Field): Column
 }
 
@@ -31,41 +36,44 @@ object ValueFormat {
     * `2020-08-27T06:20:26.900000Z` renders as `2020-08-27T06:20:26.9Z`, and
     * a whole-second time drops the fraction entirely
     * (reference: warehouse/warehouse.go:59-65, format RFC3339Micro
-    * `2006-01-02T15:04:05.999999Z07:00`). */
-  def goRfc3339Micro(c: Column): Column = {
-    val raw = date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-    regexp_replace(regexp_replace(raw, "(\\.\\d*?)0+(Z|[+-])", "$1$2"),
-      "\\.(Z|[+-])", "$1")
-  }
+    * `2006-01-02T15:04:05.999999Z07:00`). A null time stays null. */
+  def goRfc3339Micro(c: Column): Column =
+    staged(c.cast(TimestampType), timeString = false, Int.MaxValue,
+      fill = false)
 
-  /** Go renders float64 via %v: whole doubles print without ".0". */
+  /** Go renders float64 via %v: whole doubles print without ".0". A null
+    * stays null. */
   def goNumber(c: Column): Column =
-    regexp_replace(c.cast(StringType), "\\.0$", "")
+    staged(c.cast(DoubleType), timeString = false, Int.MaxValue, fill = false)
+
+  private def staged(c: Column, timeString: Boolean, maxChars: Int,
+                     fill: Boolean): Column =
+    GraftColumns.column(StagedString(GraftColumns.expression(c), timeString,
+      maxChars, fill))
+
+  /** The column cast to the kernel's input type: a timestamp, double,
+    * long, int or string stays as it is typed; anything else is staged as
+    * its string cast. */
+  private def typed(c: Column, f: Field): Column = f.dataType match {
+    case TimestampType | DoubleType | LongType | IntegerType | StringType =>
+      c.cast(f.dataType)
+    case _ => c.cast(f.dataType).cast(StringType)
+  }
 
   /** Default (storage / BigQuery) strategy
-    * (reference: warehouse/warehouse.go:54-71). */
+    * (reference: warehouse/warehouse.go:54-71): RFC3339Micro times, Go
+    * `%v` doubles, decimal integers, sanitized strings. */
   case object Default extends ValueFormat {
-    def render(c: Column, f: Field): Column = f.dataType match {
-      case TimestampType => sanitize(goRfc3339Micro(c))
-      case DoubleType    => sanitize(goNumber(c))
-      case _             => sanitize(c.cast(StringType))
-    }
+    def render(c: Column, f: Field): Column =
+      staged(typed(c, f), timeString = false, Int.MaxValue, fill = true)
   }
 
-  /** Redshift strategy: Go `t.String()` timestamp format and strings
-    * truncated to VarCharMax-1 (reference: warehouse/redshift.go:101-116). */
+  /** Redshift strategy: Go `t.String()` timestamp format
+    * (`2020-08-27 06:20:26.9 +0000 UTC`) and strings and integers cut to
+    * VarCharMax-1 characters (reference: warehouse/redshift.go:101-116). */
   final case class Redshift(varCharMax: Int = 65535) extends ValueFormat {
-    def render(c: Column, f: Field): Column = f.dataType match {
-      case TimestampType =>
-        // Go time.String(): "2020-08-27 06:20:26.9 +0000 UTC"
-        val raw = date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSSSSS")
-        val trimmed = regexp_replace(
-          regexp_replace(raw, "(\\.\\d*?)0+$", "$1"), "\\.$", "")
-        sanitize(concat(trimmed, lit(" +0000 UTC")))
-      case DoubleType => sanitize(goNumber(c))
-      case _ =>
-        substring(sanitize(c.cast(StringType)), 0, varCharMax - 1)
-    }
+    def render(c: Column, f: Field): Column =
+      staged(typed(c, f), timeString = true, varCharMax - 1, fill = true)
   }
 }
 
@@ -80,7 +88,8 @@ object ValueFormat {
   *     (internal/service.go:99-102),
   *   - spillover of all non-schema columns into one CustomVars JSON map,
   *     original key case preserved (internal/service.go:86-96,104-109),
-  *   - per-sink cast/sanitize/truncate (warehouse/warehouse.go:54-71).
+  *   - per-sink cast/render/sanitize/truncate, one native expression per
+  *     column (warehouse/warehouse.go:54-71).
   */
 object ExportTransform {
 
@@ -112,9 +121,7 @@ object ExportTransform {
     val staged = schema.map { f =>
       if (f.sourceName == "CustomVars") customVars.as(f.dbName)
       else inputByLower.get(f.sourceName.toLowerCase) match {
-        case Some(in) if !f.isDbOnly =>
-          coalesce(fmt.render(col(in).cast(f.dataType), f), lit(""))
-            .as(f.dbName)
+        case Some(in) if !f.isDbOnly => fmt.render(col(in), f).as(f.dbName)
         case _ => lit("").as(f.dbName) // DB-only or absent source field
       }
     }

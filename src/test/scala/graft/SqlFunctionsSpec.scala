@@ -36,4 +36,25 @@ class SqlFunctionsSpec extends SparkSpec {
     assert(expr.checkInputDataTypes().isSuccess)
     assert(expr.eval(null) == 1.0)
   }
+
+  test("map_min_sum's sorted merge runs where Spark's testing guard is on") {
+    // UTF8String.compareTo throws when spark.testing is set; the merge
+    // must compare keys with binaryCompare, which it delegates to
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
+    import org.apache.spark.sql.types.{LongType, MapType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    def tf(kv: (String, Long)*) = Literal(ArrayBasedMapData(
+      kv.map(p => UTF8String.fromString(p._1)).toArray[Any],
+      kv.map(_._2).toArray[Any]), MapType(StringType, LongType))
+    val expr = graft.functions.MapMinSum(
+      tf("a" -> 3L, "b" -> 1L, "d" -> 5L), tf("a" -> 2L, "c" -> 7L, "d" -> 9L))
+    val before = System.getProperty("spark.testing")
+    System.setProperty("spark.testing", "true")
+    val sum = try expr.eval(null) finally {
+      if (before == null) System.clearProperty("spark.testing")
+      else System.setProperty("spark.testing", before)
+    }
+    assert(sum == 7L)
+  }
 }

@@ -3,16 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.schema.ExportSchema
-import graft.sinks.{BigQuerySql, RedshiftSql}
+import graft.sinks.RedshiftSql
 
 /** Type-map totality + statement generation (mirrors the reference's
-  * warehouse/redshift_test.go:19-25 and bigquery_test.go:81-87 checks). */
+  * warehouse/redshift_test.go:19-25 checks). */
 class WarehouseSqlSpec extends AnyFunSuite {
 
-  test("every canonical field type has a Redshift and BigQuery DDL mapping") {
+  test("every canonical field type has a Redshift DDL mapping") {
     ExportSchema.canonical(includeMobile = true).foreach { f =>
       assert(RedshiftSql.ddlType(f.dataType).nonEmpty, f.dbName)
-      assert(BigQuerySql.ddlType(f.dataType).nonEmpty, f.dbName)
     }
   }
 
@@ -22,8 +21,6 @@ class WarehouseSqlSpec extends AnyFunSuite {
     assert(RedshiftSql.ddlType(IntegerType) == "INTEGER")
     assert(RedshiftSql.ddlType(DoubleType) == "FLOAT")
     assert(RedshiftSql.ddlType(TimestampType) == "TIMESTAMP")
-    assert(BigQuerySql.ddlType(LongType) == "INTEGER")
-    assert(BigQuerySql.ddlType(DoubleType) == "FLOAT")
   }
 
   test("qualified names honor the schema/search path") {

@@ -104,7 +104,7 @@ object Main {
       val maxBundles = kv.get("MaxBundles").map(_.toInt).getOrElse(Int.MaxValue)
       val bundles = svc.runUntilCaughtUp(maxBundles)
       bundles.foreach(b => println(
-        s"[graft] bundle ${b.start} .. ${b.end}: ${b.records} records -> ${b.ref}"))
+        s"[graft] bundle ${b.start} .. ${b.end}: ${b.records} records -> ${b.ref.getOrElse("warehouse")}"))
       println(s"[graft] caught up after ${bundles.size} bundles")
     }
     if (!preExisting) spark.stop()

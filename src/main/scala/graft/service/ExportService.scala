@@ -79,8 +79,13 @@ object RetryPolicy {
 
 /** Outcome of one ProcessNext step. */
 sealed trait StepResult
+/** One processed window. `ref` is the staged object's reference in
+  * storage-only mode, where the object is the bundle's output. In
+  * warehouse mode it is None: the rows are in the warehouse, and any
+  * object staged to load them was deleted after the load (K9). */
 final case class BundleProcessed(start: Instant, end: Instant,
-                                 records: Long, ref: String) extends StepResult
+                                 records: Long, ref: Option[String])
+    extends StepResult
 final case class WaitFor(d: Duration) extends StepResult
 
 /** The incremental micro-batch driver loop — the reference's engine
@@ -88,13 +93,16 @@ final case class WaitFor(d: Duration) extends StepResult
   * the heavy transform:
   *
   * plan window -> watermark gate -> pushdown scan (source export) ->
-  * one-select transform -> CSV/JSON staging -> warehouse load (the first
-  * window of a day replaces the day, later windows append) -> sync-point
-  * commit.
+  * one-select transform -> warehouse load (the first window of a day
+  * replaces the day, later windows append) or, in storage-only mode,
+  * CSV/JSON staging -> sync-point commit.
   *
-  * Each bundle is decoded once: the staging write is the only Spark action
-  * on the fetched export, and the bundle's row count is observed by that
-  * write job (`Dataset.observe`), not by a second scan.
+  * Each bundle is decoded once: one write is the only Spark action on the
+  * fetched export, and the bundle's row count is observed by that write
+  * job (`Dataset.observe`), not by a second scan. In warehouse mode that
+  * write is [[Warehouse.loadRows]]: the Parquet warehouses write the rows
+  * into the table in one job, and a warehouse that loads a staged object
+  * stages it in that job and loads it after.
   *
   * The load-then-checkpoint ordering plus [[Warehouse.removeOrphanedRecords]]
   * at startup reproduces the exactly-once recovery invariant
@@ -106,6 +114,9 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
                     valueFormat: ValueFormat = ValueFormat.Default,
                     pollInterval: Duration = Duration.ofSeconds(5),
                     now: () => Instant = () => Instant.now()) {
+
+  require(config.storageOnly || warehouse.nonEmpty,
+    "a warehouse is needed unless StorageOnly")
 
   private var schema: Seq[Field] = ExportSchema.canonical(config.includeMobile)
 
@@ -144,36 +155,37 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
       if (exportId.isEmpty) Thread.sleep(pollInterval.toMillis)
     }
 
-    // Fetch + transform + stage (reference: internal/service.go:317-351);
-    // the staging write is the one job that decodes the bundle
+    // Fetch + transform + stage or load (reference:
+    // internal/service.go:317-351); one write decodes the bundle
     val id = exportId.get
     val bundleName = s"${start.getEpochSecond}"
     try {
       val raw = source.getExport(id)
       val rows = Observation()
-      val ref =
-        if (config.saveAsJson)
-          CsvStage.writeBundleJson(
-            ExportTransform.toRecordJson(raw).observe(rows, count(lit(1))),
-            storage, s"$bundleName.json")
-        else CsvStage.writeBundleCsv(
-          ExportTransform.toStagedStrings(raw, schema, valueFormat)
-            .observe(rows, count(lit(1))),
-          storage, s"$bundleName.csv")
-      val records = observed(rows)
+      def staged = ExportTransform.toStagedStrings(raw, schema, valueFormat)
+        .observe(rows, count(lit(1)))
 
       // Load + commit; sync point saved strictly AFTER the load so a crash
       // between the two is healed by removeOrphanedRecords on restart
       // (reference: internal/service.go:121-156, crash comment :147-150).
-      if (config.storageOnly) {
-        StorageSyncPoint.write(storage, end)
-      } else warehouse.foreach { wh =>
-        val truncateDay = isDayStart(start)
-        wh.loadToWarehouse(ref, start, truncateDay)
-        wh.saveSyncPoint(end)
-        storage.deleteFile(s"$bundleName.csv") // staged-file cleanup (K9)
-      }
-      BundleProcessed(start, end, records, ref)
+      val ref =
+        if (config.storageOnly) {
+          val ref =
+            if (config.saveAsJson) CsvStage.writeBundleJson(
+              ExportTransform.toRecordJson(raw).observe(rows, count(lit(1))),
+              storage, s"$bundleName.json")
+            else CsvStage.writeBundleCsv(staged, storage, s"$bundleName.csv")
+          StorageSyncPoint.write(storage, end)
+          Some(ref)
+        } else {
+          warehouse.foreach { wh =>
+            wh.loadRows(staged, storage, s"$bundleName.csv", start,
+              truncateDay = isDayStart(start))
+            wh.saveSyncPoint(end)
+          }
+          None
+        }
+      BundleProcessed(start, end, observed(rows), ref)
     } finally source.release(id) // a retry fetches the window anew
   }
 

@@ -34,6 +34,10 @@ object CsvStage {
       .option("header", "true")
       .option("escape", "\"")     // RFC4180: "" not \"
       .option("emptyValue", "")   // absent fields -> empty cell, not ""
+      // values verbatim, as Go's encoding/csv writes them (Spark's writer
+      // trims both edges by default)
+      .option("ignoreLeadingWhiteSpace", "false")
+      .option("ignoreTrailingWhiteSpace", "false")
       .option(MarkSuccess, "false")
       .mode("overwrite")
       .csv(tmp)

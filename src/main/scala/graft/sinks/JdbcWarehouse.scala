@@ -15,8 +15,8 @@ import graft.schema.{ExportSchema, Field}
   * with sqlx (reference: warehouse/redshift.go:150-163 ExecuteQuery,
   * :195-238 create/alter, :266-328 sync-point log, :330-354 orphan heal).
   *
-  * The bulk load is the stage-then-COPY pattern: `CsvStage` stages the
-  * object, and
+  * The bulk load is the stage-then-COPY pattern, the default
+  * [[Warehouse.loadRows]]: `CsvStage` stages the object, and
   *   - on Redshift the single `RedshiftSql.copyFrom` statement loads it
   *     server-side (pass a `copyCredentials`);
   *   - everywhere else the staged CSV is read back by Spark and written

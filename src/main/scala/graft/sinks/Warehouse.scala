@@ -11,8 +11,15 @@ import graft.schema.{ExportSchema, Field}
 
 /** Warehouse-database abstraction, mirroring the reference's `Database`
   * interface (reference: warehouse/warehouse.go:43-52): export-table DDL +
-  * schema evolution, bulk load from a staged object, the committed sync
-  * point, and crash-recovery healing.
+  * schema evolution, the bundle load, the committed sync point, and
+  * crash-recovery healing.
+  *
+  * A bundle reaches the table through [[loadRows]]. A warehouse outside
+  * the process (Redshift `COPY`, a BigQuery load job) reads a staged
+  * object, so the default stages one, bulk-loads it with
+  * [[loadToWarehouse]] and deletes it. A warehouse that Spark writes
+  * itself ([[ParquetWarehouse]]) overrides it and writes the rows straight
+  * into the table: one Spark job per bundle, with no object staged.
   */
 trait Warehouse {
   /** Create the export table if missing; true if created
@@ -29,6 +36,16 @@ trait Warehouse {
     * (reference: bigquery.go:130-161). */
   def loadToWarehouse(csvRef: String, bundleStart: Instant,
                       truncateDay: Boolean): Unit
+  /** Load one bundle's staged rows (`rows`: staged strings, live column
+    * order). The default is stage-then-load: `rows` staged as the CSV
+    * object `name` in `storage`, bulk-loaded by [[loadToWarehouse]], then
+    * deleted (K9). `truncateDay` as for [[loadToWarehouse]]. */
+  def loadRows(rows: DataFrame, storage: Storage, name: String,
+               bundleStart: Instant, truncateDay: Boolean): Unit = {
+    val ref = CsvStage.writeBundleCsv(rows, storage, name)
+    loadToWarehouse(ref, bundleStart, truncateDay)
+    storage.deleteFile(name)
+  }
   /** Committed sync point (reference: redshift.go:266-328, bigquery.go:59-128). */
   def lastSyncPoint(): Option[Instant]
   def saveSyncPoint(bundleEnd: Instant): Unit
@@ -43,7 +60,9 @@ trait Warehouse {
 
 /** Day-partitioned parquet warehouse — the Spark-native analog of the
   * BigQuery date-partitioned export table (reference: bigquery.go:142-151,
-  * 213-226). The first bundle of a day replaces the day partition
+  * 213-226). Spark writes it directly, so a bundle's rows go into their
+  * day partition in one write, where BigQuery runs a load job over a
+  * staged object. The first bundle of a day replaces the day partition
   * (BigQuery's WriteTruncate); later bundles append, and the sync point
   * with orphan healing keeps them exactly-once.
   *
@@ -117,36 +136,56 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
     writeColumns(schema)
   }
 
+  /** The bundle's rows written straight into its day partition: no object
+    * is staged, and the write is the bundle's one Spark job. */
+  override def loadRows(rows: DataFrame, storage: Storage, name: String,
+                        bundleStart: Instant, truncateDay: Boolean): Unit =
+    writeDay(tableRows(rows), bundleStart, truncateDay)
+
   override def loadToWarehouse(csvRef: String, bundleStart: Instant,
-                               truncateDay: Boolean): Unit = {
+                               truncateDay: Boolean): Unit =
+    writeDay(readStaged(csvRef), bundleStart, truncateDay)
+
+  /** Appends `rows` to `bundleStart`'s day partition, replacing the day
+    * first when `truncateDay`. */
+  private def writeDay(rows: DataFrame, bundleStart: Instant,
+                       truncateDay: Boolean): Unit = {
     val dayDir = s"$dataPath/day=${dayOf(bundleStart)}"
     // WriteTruncate, also of an empty bundle (an overwrite of no rows would not)
     if (truncateDay) dataFs.delete(new Path(dayDir), true)
-    readStaged(csvRef).write.mode(SaveMode.Append)
+    rows.write.mode(SaveMode.Append)
       .option(CsvStage.MarkSuccess, "false")
       .parquet(dayDir)
   }
 
-  /** One staged CSV bundle as table rows: the live columns, in order, one
-    * projection with every null (a column the staged file predates, under
-    * append-only evolution, or an empty cell) empty-filled. */
+  /** Staged rows as table rows: the live columns, in order, taken by
+    * position as a staged CSV's are, in one projection with every null (a
+    * column the rows predate, under append-only evolution, or an empty
+    * cell) empty-filled. */
+  private def tableRows(rows: DataFrame): DataFrame = {
+    val in = rows.columns
+    rows.select(getExportTableColumns().zipWithIndex.map { case (c, i) =>
+      (if (i < in.length) coalesce(rows.col(s"`${in(i)}`"), lit(""))
+       else lit("")).as(c)
+    }: _*)
+  }
+
+  /** One staged CSV bundle as table rows ([[tableRows]]). */
   def readStaged(csvRef: String): DataFrame = {
-    val cols = getExportTableColumns()
     // Explicit all-string schema: never infer (an empty bundle stages an
     // empty file, which has no header row to infer from).
-    val stagedSchema = org.apache.spark.sql.types.StructType(cols.map(c =>
-      org.apache.spark.sql.types.StructField(c,
-        org.apache.spark.sql.types.StringType)))
+    val stagedSchema = org.apache.spark.sql.types.StructType(
+      getExportTableColumns().map(c => org.apache.spark.sql.types.StructField(
+        c, org.apache.spark.sql.types.StringType)))
     // multiLine: the parser reads the file as one stream instead of once
     // per line, where it ends every line by throwing an EOF. A staged cell
     // holds no raw line break (strings are sanitized, custom vars are
     // JSON), so both read the same records.
-    spark.read
+    tableRows(spark.read
       .option("header", "true").option("escape", "\"")
       .option("multiLine", "true")
       .schema(stagedSchema)
-      .csv(csvRef)
-      .select(cols.map(c => coalesce(col(c), lit("")).as(c)): _*)
+      .csv(csvRef))
   }
 
   def readTable(): DataFrame = spark.read.parquet(dataPath)
@@ -237,9 +276,10 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
   * its sync write), recovery REWINDS the sync point to the start of that
   * day and commits the rewound point; the service then re-exports from the
   * day boundary and the first bundle of the day loads with
-  * WriteTruncate ([[ParquetWarehouse.loadToWarehouse]] `truncateDay`),
+  * WriteTruncate ([[ParquetWarehouse.loadRows]] `truncateDay`),
   * replacing the partition — cleanup happens on load, not at recovery
-  * time. [[removeOrphanedRecords]] is accordingly a no-op. */
+  * time. [[removeOrphanedRecords]] is accordingly a no-op, except before
+  * the first commit, when there is no sync point to rewind to. */
 class BigQueryParquetWarehouse(spark: SparkSession, tablePath: String)
     extends ParquetWarehouse(spark, tablePath) {
 
@@ -256,6 +296,11 @@ class BigQueryParquetWarehouse(spark: SparkSession, tablePath: String)
       }
     }
 
-  /** Cleanup occurs on load (WriteTruncate), never as a DELETE. */
-  override def removeOrphanedRecords(syncPoint: Instant): Unit = ()
+  /** Cleanup occurs on load (WriteTruncate), never as a DELETE, once a
+    * sync point is committed. Before that, a first window loaded but not
+    * committed has no day start to rewind to (it need not start a day, and
+    * the day may begin before StartTime), so its rows at or after
+    * `syncPoint`, the StartTime, are healed as on [[ParquetWarehouse]]. */
+  override def removeOrphanedRecords(syncPoint: Instant): Unit =
+    if (super.lastSyncPoint().isEmpty) super.removeOrphanedRecords(syncPoint)
 }

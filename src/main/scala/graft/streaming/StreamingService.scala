@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.service.{ExportService, ServiceConfig}
-import graft.sinks.{CsvStage, Storage, Warehouse}
+import graft.sinks.{Storage, Warehouse}
 import graft.transform.{ExportTransform, ValueFormat}
 
 /** Structured-Streaming front door for the CLI's incremental lifecycle
@@ -20,8 +20,8 @@ import graft.transform.{ExportTransform, ValueFormat}
   *   - the EXPORT WINDOW maturity gate (now - delay >= window end) bounds
   *     what is processed, exactly like processNext — records at or past
   *     the last mature window end stay unread for the next invocation;
-  *   - each micro-batch stages RFC4180 CSV per day and loads through the
-  *     same [[graft.sinks.Warehouse]] bulk-load path the batch loop uses;
+  *   - each micro-batch loads each of its days through the same
+  *     [[graft.sinks.Warehouse.loadRows]] the batch loop uses;
   *   - recovery-then-load-then-commit ordering is preserved: orphaned rows
   *     are healed up front, the sync point is written only after the
   *     stream fully drains, so a crash mid-stream is healed by the next
@@ -79,8 +79,8 @@ object StreamingService {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        // one staged CSV + bulk load per day in the batch, through the
-        // same Warehouse path as the batch loop (bundleStart = day start
+        // one load per day in the batch, through the same
+        // Warehouse.loadRows as the batch loop (bundleStart = day start
         // places rows in their day partition; appends-then-commit keeps
         // the orphan-healing contract on crash). The batch is persisted so
         // the day list and every day's write read one decode of it.
@@ -94,11 +94,8 @@ object StreamingService {
           days.sorted.foreach { day =>
             val dayRows = batch.filter(
               to_date(to_timestamp(col("EventStart"))) === lit(day))
-            val name = s"stream_${id}_$day.csv"
-            val ref = CsvStage.writeBundleCsv(dayRows, storage, name)
-            warehouse.loadToWarehouse(ref,
+            warehouse.loadRows(dayRows, storage, s"stream_${id}_$day.csv",
               Instant.parse(s"${day}T00:00:00Z"), truncateDay = false)
-            storage.deleteFile(name) // staged-file cleanup (K9)
           }
         } finally batch.unpersist()
       }

@@ -3,9 +3,11 @@ package graft
 import java.nio.file.Files
 import java.time.Instant
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.debug.codegenStringSeq
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.schema.ExportSchema
 import graft.sinks.{CsvStage, HadoopStorage, ParquetWarehouse}
@@ -17,16 +19,33 @@ import graft.transform.ExportTransform
   * that size runs interpreted for the life of the process. */
 class CodegenSizeSpec extends SparkSpec {
 
-  /** Every whole-stage-codegen subtree of `df`'s plan, compiled: each
-    * method's bytecode is under the huge-method limit. */
-  private def assertJitSized(df: DataFrame, what: String): Unit = {
-    val stages = codegenStringSeq(df.queryExecution.executedPlan)
+  /** Every whole-stage-codegen subtree of `plan`, compiled: each method's
+    * bytecode is under the huge-method limit. */
+  private def assertJitSized(plan: SparkPlan, what: String): Unit = {
+    val stages = codegenStringSeq(plan)
     assert(stages.nonEmpty, s"$what: no generated code")
     stages.foreach { case (subtree, _, stats) =>
       assert(stats.maxMethodCodeSize > 0, s"$what: did not compile\n$subtree")
       assert(stats.maxMethodCodeSize < CodeGenerator.DEFAULT_JVM_HUGE_METHOD_LIMIT,
         s"$what: a ${stats.maxMethodCodeSize}-byte method\n$subtree")
     }
+  }
+
+  /** The executed plans of the writes `body` runs. */
+  private def writePlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
   }
 
   test("staging and load projections compile to methods the JIT takes") {
@@ -36,22 +55,33 @@ class CodegenSizeSpec extends SparkSpec {
       """[{"EventStart": "2020-08-27T06:20:26.9Z", "UserId": 7,
         |  "EventCumulativeLayoutShift": 0.5, "AppName": "a", "evt_x": 1}]"""
         .stripMargin)
+    def staged(mobile: Boolean) = ExportTransform.toStagedStrings(
+      spark.read.format("graft-export").load(bundle.toString),
+      ExportSchema.canonical(mobile))
+    val day = Instant.parse("2020-08-27T00:00:00Z")
     for (mobile <- Seq(false, true)) {
-      val staged = ExportTransform.toStagedStrings(
-        spark.read.format("graft-export").load(bundle.toString),
-        ExportSchema.canonical(mobile))
-      assertJitSized(staged, s"staging projection, includeMobile=$mobile")
+      assertJitSized(staged(mobile).queryExecution.executedPlan,
+        s"staging projection, includeMobile=$mobile")
+
+      // the plan the Parquet warehouses' one write per bundle executes
+      val wh = new ParquetWarehouse(spark, dir.resolve(s"wh-$mobile").toString)
+      wh.initExportTable(ExportSchema.canonical(mobile))
+      val plans = writePlans(wh.loadRows(staged(mobile),
+        new HadoopStorage(dir.resolve("stage").toString), "0.csv", day,
+        truncateDay = true))
+      assert(plans.size == 1, s"includeMobile=$mobile")
+      assertJitSized(plans.head, s"direct write, includeMobile=$mobile")
+      assert(wh.readTable().count() == 1)
     }
 
     val schema = ExportSchema.canonical(includeMobile = false)
     val wh = new ParquetWarehouse(spark, dir.resolve("wh").toString)
     wh.initExportTable(schema)
-    val ref = CsvStage.writeBundleCsv(ExportTransform.toStagedStrings(
-      spark.read.format("graft-export").load(bundle.toString), schema),
+    val ref = CsvStage.writeBundleCsv(staged(mobile = false),
       new HadoopStorage(dir.resolve("stage").toString), "1.csv")
-    assertJitSized(wh.readStaged(ref), "load projection")
-    wh.loadToWarehouse(ref, Instant.parse("2020-08-27T00:00:00Z"),
-      truncateDay = true)
+    assertJitSized(wh.readStaged(ref).queryExecution.executedPlan,
+      "load projection")
+    wh.loadToWarehouse(ref, day, truncateDay = true)
     assert(wh.readTable().count() == 1)
   }
 }

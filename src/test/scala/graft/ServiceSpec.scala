@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 import java.time.{Duration, Instant}
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 
 import graft.schema.ExportSchema
 import graft.service.{BundleProcessed, ExportService, RetryPolicy, ServiceConfig, WaitFor}
-import graft.sinks.{HadoopStorage, ParquetWarehouse, StorageSyncPoint}
+import graft.sinks.{BigQueryParquetWarehouse, HadoopStorage, JdbcWarehouse, ParquetWarehouse, StorageSyncPoint}
 import graft.sources.LocalFixtureSource
 import graft.transform.ExportTransform
 
@@ -42,11 +42,14 @@ class ServiceSpec extends SparkSpec {
   }
 
   private def newService(tmp: Path, storageOnly: Boolean = false,
-                         saveAsJson: Boolean = false) = {
+                         saveAsJson: Boolean = false,
+                         bigQuery: Boolean = false) = {
     val fixture = writeFixture(tmp)
     val storage = new HadoopStorage(tmp.resolve("stage").toString)
+    val dir = tmp.resolve("wh").toString
     val wh = if (storageOnly) None
-      else Some(new ParquetWarehouse(spark, tmp.resolve("wh").toString))
+      else if (bigQuery) Some(new BigQueryParquetWarehouse(spark, dir))
+      else Some(new ParquetWarehouse(spark, dir))
     val config = ServiceConfig(startTime = startTime,
       exportDuration = Duration.ofHours(24), storageOnly = storageOnly,
       saveAsJson = saveAsJson)
@@ -118,6 +121,72 @@ class ServiceSpec extends SparkSpec {
           Seq(2L, 2L, 2L, 0L), s"saveAsJson=$json")
       } finally sc.removeSparkListener(listener)
     }
+  }
+
+  test("a warehouse-mode bundle is one Spark job and stages no object on the Parquet flavors") {
+    for (bigQuery <- Seq(false, true)) {
+      val tmp = Files.createTempDirectory("graft-e2e-jobs")
+      val (svc, _, Some(wh)) = newService(tmp, bigQuery = bigQuery): @unchecked
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      val sc = spark.sparkContext
+      svc.init()
+      svc.recover()
+      ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val perBundle = Iterator.continually {
+          jobs.set(0)
+          val step = svc.processNext()
+          ListenerBusDrain(sc)
+          (step, jobs.get())
+        }.takeWhile(!_._1.isInstanceOf[WaitFor]).toSeq
+        val clue = s"bigQuery=$bigQuery"
+        assert(perBundle.map(_._2) == Seq(1, 1, 1, 1), clue)
+        assert(perBundle.forall(_._1.asInstanceOf[BundleProcessed]
+          .ref.isEmpty), clue)
+        val stage = tmp.resolve("stage").toFile
+        val left = Option(stage.list()).toSeq.flatten
+          .filter(n => n.endsWith(".csv") || n.startsWith("_tmp_"))
+        assert(left.isEmpty, clue)
+      } finally sc.removeSparkListener(listener)
+      assert(wh.readTable().count() == 6)
+    }
+  }
+
+  test("staging keeps a value's edge whitespace, and the JDBC flavor loads it") {
+    val tmp = Files.createTempDirectory("graft-e2e-padded")
+    Files.writeString(tmp.resolve("raw.json"),
+      """[{"EventStart": "2020-08-27T06:00:00Z", "UserId": 1,
+        | "PageUrl": " padded ", "EventTargetText": "line1\n"}]"""
+        .stripMargin.replace("\n ", ""))
+    val config = ServiceConfig(startTime = startTime,
+      exportDuration = Duration.ofHours(24))
+    def run(storageOnly: Boolean, wh: Option[JdbcWarehouse]): HadoopStorage = {
+      val storage = new HadoopStorage(
+        tmp.resolve(s"stage-$storageOnly").toString)
+      new ExportService(spark, config.copy(storageOnly = storageOnly),
+        new LocalFixtureSource(spark, tmp.resolve("raw.json").toString),
+        storage, wh, pollInterval = Duration.ofMillis(1),
+        now = () => frozenNow).runUntilCaughtUp(maxBundles = 1)
+      storage
+    }
+    val staged = spark.read.option("header", "true")
+      .csv(run(storageOnly = true, None).getFileReference("1598486400.csv"))
+      .collect().head
+    assert(staged.getAs[String]("PageUrl") == " padded ")
+    // sanitized: the line break is a space, and it stays
+    assert(staged.getAs[String]("EventTargetText") == "line1 ")
+
+    val url = s"jdbc:derby:${tmp.resolve("db")};create=true"
+    run(storageOnly = false, Some(new JdbcWarehouse(spark, url)))
+    val loaded = spark.read.jdbc(url, "\"export\"", new java.util.Properties())
+      .collect().head
+    assert(loaded.getAs[String]("PageUrl") == " padded ")
+    assert(loaded.getAs[String]("EventTargetText") == "line1 ")
   }
 
   test("the orphan check reads only the partitions from the sync point's day") {

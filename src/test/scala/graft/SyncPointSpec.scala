@@ -6,11 +6,12 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.schema.Field
 import graft.service.{ExportService, ServiceConfig}
-import graft.sinks.{BigQueryParquetWarehouse, HadoopStorage, JdbcWarehouse, ParquetWarehouse, StorageSyncPoint, Warehouse}
+import graft.sinks.{BigQueryParquetWarehouse, HadoopStorage, JdbcWarehouse, ParquetWarehouse, Storage, StorageSyncPoint, Warehouse}
 import graft.sources.LocalFixtureSource
 
 /** The Parquet warehouse's sync point: one [[StorageSyncPoint]] object,
@@ -66,11 +67,15 @@ class SyncPointSpec extends SparkSpec {
     // each input: its records, the window ends whose commit fails once
     // after the window's rows were appended, and the flavors it runs on
     val cases = Seq(
-      // the first window and the third; the BigQuery flavor cannot heal a
-      // first window, which has no sync point to rewind from
+      // the first window and the third; neither starts a day, and the
+      // first has no sync point to rewind from
       (Seq("2020-08-27T06:20:26.900Z" -> 100, "2020-08-27T08:30:00Z" -> 200),
         Set("2020-08-27T07:00:00Z", "2020-08-27T09:00:00Z"),
-        Seq("parquet")),
+        Seq("parquet", "bigquery")),
+      // the first window alone: no later rewind to the day start and its
+      // truncating reload hides a first window appended twice
+      (Seq("2020-08-27T06:20:26.900Z" -> 100, "2020-08-27T08:30:00Z" -> 200),
+        Set("2020-08-27T07:00:00Z"), Seq("parquet", "bigquery", "jdbc")),
       // a window whose only row sits exactly at its start, which is the
       // committed sync point: a heal that keeps `EventStart == sync`
       // loads that row twice
@@ -232,6 +237,9 @@ class ForwardingWarehouse(in: Warehouse) extends Warehouse {
   override def loadToWarehouse(csvRef: String, bundleStart: Instant,
                                truncateDay: Boolean): Unit =
     in.loadToWarehouse(csvRef, bundleStart, truncateDay)
+  override def loadRows(rows: DataFrame, storage: Storage, name: String,
+                        bundleStart: Instant, truncateDay: Boolean): Unit =
+    in.loadRows(rows, storage, name, bundleStart, truncateDay)
   override def lastSyncPoint(): Option[Instant] = in.lastSyncPoint()
   override def saveSyncPoint(bundleEnd: Instant): Unit =
     in.saveSyncPoint(bundleEnd)

@@ -1,85 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions hook: makes graft's native expressions available
-  * to every session (Column API and plain SQL) via
-  * `spark.sql.extensions=graft.functions.GraftExtensions` — the idiomatic
-  * deployment for a cluster, where per-session GraftFunctions.register
-  * calls are not an option.
-  */
+/** SparkSessionExtensions hook: installs graft's SQL functions
+  * ([[GraftFunctions.sqlFunctions]]) on every session built with
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, the deployment
+  * for plain-SQL users of a cluster. The Column API needs no
+  * installation. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    // the full 11-arg constructor is the only non-deprecated way to
-    // carry a usage string; "built-in" is the one registry-accepted
-    // source tag for JVM expressions
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "",
-      "", "built-in")
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(tokens, k, n, md5, bands) - MinHash signature / LSH band keys"),
-      (exprs: Seq[Expression]) =>
-        MinHashSig(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))))
-    e.injectFunction((FunctionIdentifier("hyperplane_lsh"),
-      info("hyperplane_lsh", "hyperplane_lsh(vec, planes) - sign-bit LSH bucket id"),
-      (exprs: Seq[Expression]) => HyperplaneLsh(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", "word_shingles(tokens, n) - word n-gram shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("simhash_md5"),
-      info("simhash_md5", "simhash_md5(tokens) - portable 64-bit SimHash hex"),
-      (exprs: Seq[Expression]) => SimHashMd5(exprs(0))))
-    e.injectFunction((FunctionIdentifier("cosine_exact"),
-      info("cosine_exact", "cosine_exact(a, b) - decimal-exact (oracle-bitwise) cosine"),
-      (exprs: Seq[Expression]) => CosineExactDecimal(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("nearest_cells"),
-      info("nearest_cells", "nearest_cells(vec, centroids, probes, exact) - map-side IVF cell assignment"),
-      (exprs: Seq[Expression]) =>
-        NearestCells(exprs(0), exprs(1), exprs(2), exprs(3))))
-    e.injectFunction((FunctionIdentifier("hex_hamming"),
-      info("hex_hamming", "hex_hamming(a, b) - Hamming distance of two hex simhashes"),
-      (exprs: Seq[Expression]) => HexHamming(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("pq_adc"),
-      info("pq_adc", "pq_adc(codes, luts, qnorm, nsq) - PQ asymmetric-distance cosine"),
-      (exprs: Seq[Expression]) =>
-        AdcCosine(exprs(0), exprs(1), exprs(2), exprs(3))))
-    // The registry below keeps this path EQUIVALENT to
-    // GraftFunctions.register: operators call these unconditionally
-    // (weightedMinhashPairs -> map_min_sum, the decontamination path ->
-    // bloom_agg/bloom_might_contain, ...), so a session configured only
-    // via spark.sql.extensions must resolve them too.
-    e.injectFunction((FunctionIdentifier("bpe_encode"),
-      info("bpe_encode", "bpe_encode(tokens, merges) - one-pass BPE subword tokenization"),
-      (exprs: Seq[Expression]) => BpeEncode(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("cdc_pairs"),
-      info("cdc_pairs", "cdc_pairs(text, w) - content-defined chunk [start,end) pairs"),
-      (exprs: Seq[Expression]) => CdcPairs(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("blocklist_hits"),
-      info("blocklist_hits", "blocklist_hits(tokens, dict) - blocklist hit terms"),
-      (exprs: Seq[Expression]) => BlocklistHits(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("char_entropy"),
-      info("char_entropy", "char_entropy(text) - character-level Shannon entropy"),
-      (exprs: Seq[Expression]) => CharEntropy(exprs(0))))
-    e.injectFunction((FunctionIdentifier("map_min_sum"),
-      info("map_min_sum", "map_min_sum(a, b) - sum of min(a[t], b[t]) over two tf maps"),
-      (exprs: Seq[Expression]) => MapMinSum(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("bloom_agg"),
-      info("bloom_agg", "bloom_agg(hashed, items, bits) - distributed bloom-filter build"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-          .toAggregateExpression()))
-    e.injectFunction((FunctionIdentifier("bloom_might_contain"),
-      info("bloom_might_contain", "bloom_might_contain(bloom, hashed) - map-side bloom probe"),
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs(0), exprs(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach(f =>
+      e.injectFunction((f.identifier, f.info, f.build)))
 }

@@ -85,7 +85,7 @@ object Bpe {
 
   /** Subword tokens of a text column under a merge table: the native
     * one-pass expression over the whitespace tokens; the merge table
-    * travels as a foldable literal. Requires GraftFunctions.register. */
+    * travels as a foldable literal. */
   def encode(text: Column, merges: Seq[(String, String)]): Column =
     graft.functions.GraftFunctions.bpe_encode(
       TextAnalysis.tokens(text),

@@ -40,7 +40,7 @@ object Dedup {
     * minima over n-gram shingles. String-min MinHash is engine-portable
     * (DuckDB computes the identical signature), which makes the whole LSH
     * pipeline oracle-checkable. One native pass per row (see
-    * [[graft.functions.MinHashSig]]); requires GraftFunctions.register. */
+    * [[graft.functions.MinHashSig]]). */
   def minhashSignature(text: Column, k: Int, shingleN: Int): Column =
     graft.functions.GraftFunctions.minhash_sig(
       TextAnalysis.tokens(text), k, shingleN, useMd5 = true)
@@ -511,7 +511,7 @@ object Dedup {
 
   /** Portable 64-bit SimHash as a hex string (md5 token hashes, per-bit
     * majority vote) — oracle-checkable; see
-    * [[graft.functions.SimHashMd5]]. Requires GraftFunctions.register. */
+    * [[graft.functions.SimHashMd5]]. */
   def simhashHex(text: Column): Column =
     graft.functions.GraftFunctions.simhash_md5(TextAnalysis.tokens(text))
 
@@ -519,8 +519,7 @@ object Dedup {
     * native pass ([[graft.functions.HexHamming]]); engine-portable
     * semantics (digit-wise bit_count of XOR), so it oracle-checks.
     * Applied to candidate pairs only; [[hammingHexStrHof]] below is the
-    * executable spec a differential test pins it against. Requires
-    * GraftFunctions.register. */
+    * executable spec a differential test pins it against. */
   def hammingHexStr(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.hex_hamming(a, b)
 

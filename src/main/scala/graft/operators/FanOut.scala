@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Scan-stage fan-out for unsplittable inputs (optimization guide §2.5,
   * "input skew: one huge unsplittable file ... repartition immediately
@@ -27,17 +29,24 @@ import org.apache.spark.sql.DataFrame
   * struct-min/max instead of positional collect_list).
   */
 object FanOut {
-  /** CONTRACT: `df` must be an exchange-free BATCH frame (a scan plus
-    * narrow projections/filters — which is what every call site passes).
-    * The guard reads the partitioning via `.rdd`, which on a plain scan
-    * plan compiles the physical plan without running a job; on a
-    * shuffle-bearing frame under AQE, `AdaptiveSparkPlanExec.doExecute`
-    * would eagerly materialize upstream query stages at plan time (work
-    * discarded and re-run at execution), and `.rdd` throws on streaming
-    * frames — hence the require below. */
+  /** CONTRACT: `df` is an exchange-free BATCH frame (a scan plus narrow
+    * projections/filters). The guard reads the partitioning via `.rdd`,
+    * which on a plain scan plan compiles the physical plan without running
+    * a job; on a shuffle-bearing frame under AQE,
+    * `AdaptiveSparkPlanExec.doExecute` would run the upstream query
+    * stages at plan time (work discarded and re-run at execution). So a
+    * frame whose physical plan holds an exchange comes back unchanged,
+    * unprobed: its partitioning is the exchange's, not a scan's. `.rdd`
+    * throws on streaming frames, hence the require. */
   def apply(df: DataFrame): DataFrame = {
     require(!df.isStreaming, "FanOut is a batch-scan helper")
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+    if (plan.exists(_.isInstanceOf[Exchange]) || df.rdd.getNumPartitions >= p)
+      df
+    else df.repartition(p)
   }
 }

@@ -31,8 +31,7 @@ object TextAnalysis {
       lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
 
   /** Real BPE token count under a trained merge table (the
-    * [[graft.operators.Bpe]] native tokenizer; requires
-    * GraftFunctions.register). */
+    * [[graft.operators.Bpe]] native tokenizer). */
   def bpeTokenCount(text: Column, merges: Seq[(String, String)]): Column =
     Bpe.tokenCount(text, merges)
 
@@ -122,9 +121,8 @@ object TextAnalysis {
       regexp_replace(lower(text), "[^a-z0-9\\s]", " "), "\\s+", " "))
 
   /** Word n-gram shingles as space-joined strings, for MinHash / Jaccard.
-    * One native pass per row (requires GraftFunctions.register on the
-    * session — the HOF formulation re-evaluates the token split per
-    * shingle, which is quadratic per row). */
+    * One native pass per row (the HOF formulation re-evaluates the token
+    * split per shingle, which is quadratic per row). */
   def shingles(text: Column, n: Int): Column =
     graft.functions.GraftFunctions.word_shingles(tokens(text), n)
 
@@ -930,7 +928,7 @@ object TextAnalysis {
     * every reference after projection collapse); the corpus is scanned
     * once with ZERO shuffle until the final digest-duplicate count (a
     * hash exchange on the 16-byte digest, the exact exchange chunk-dedup
-    * must pay). Requires GraftFunctions.register on the session.
+    * must pay).
     * Returns (id, chunk_id, start_pos, chunk_len, digest, n_dups). */
   def cdcChunks(df: DataFrame, idCol: String, textCol: String,
                 w: Int = 8, dupCounts: Boolean = true): DataFrame = {
@@ -1564,7 +1562,7 @@ object TextAnalysis {
     // char_entropy(NULL) is NULL, which silently drops the doc from
     // low_docs while the oracle counts it below every threshold —
     // blocklistScan and encodingAudit apply the same normalization
-    val h = round(call_function("char_entropy",
+    val h = round(graft.functions.GraftFunctions.char_entropy(
       coalesce(col(textCol), lit(""))), 6)
     docs.select(col(groupCol).as("grp"), h.as("h"))
       .groupBy(col("grp").as(groupCol))
@@ -1770,7 +1768,7 @@ object TextAnalysis {
       // NULL count treats it the same), not a dropped one: a null array
       // under posexplode would silently delete the doc from n_docs
       .select(col(groupCol).as("grp"),
-        call_function("blocklist_hits",
+        graft.functions.GraftFunctions.blocklist_hits(
           lower(coalesce(col(textCol), lit(""))), lit_).as("h"))
       .select(col("grp"), posexplode(col("h")).as(Seq("pidx", "hits")))
     // dictionary-scale mode (q323): a zero-hit row contributes nothing

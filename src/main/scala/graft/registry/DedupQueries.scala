@@ -3,7 +3,6 @@ package registry
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.{Dedup, Multimodal, TextAnalysis}
 
 import SparkHelpers._
@@ -40,7 +39,6 @@ private[graft] object DedupQueries {
       "SELECT COUNT(*) AS n_unique FROM (SELECT DISTINCT text FROM documents) s"),
 
     QuerySpec("q36_jaccard_pairs", ((s, dir) => {
-      GraftFunctions.register(s)
       val d = t(s, dir, "documents")
       val a = d.select(col("doc_id").as("a_id"), col("text").as("a_text"))
       val b = d.select(col("doc_id").as("b_id"), col("text").as("b_text"))
@@ -79,7 +77,6 @@ private[graft] object DedupQueries {
         |ORDER BY a_id""".stripMargin),
 
     QuerySpec("q37_dedup_minhash_lsh", ((s, dir) => {
-      GraftFunctions.register(s)
       Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
           k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = false)
         .orderBy(col("a_id"), col("b_id"))
@@ -89,7 +86,6 @@ private[graft] object DedupQueries {
 
     QuerySpec("q38_dedup_simhash", ((s, dir) => {
       // portable md5-based SimHash — oracle-checkable hex signatures
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"), Dedup.simhashHex(col("text")).as("simhash"))
         .orderBy(col("doc_id"))
@@ -115,7 +111,6 @@ private[graft] object DedupQueries {
     QuerySpec("q39_dedup_minhash_fast", ((s, dir) => {
       // the seeded-FNV scale path of q37; oracle = ground-truth all-pairs
       // Jaccard (equality doubles as an LSH recall=1.0 check on this data)
-      GraftFunctions.register(s)
       Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
           k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = true)
         .orderBy(col("a_id"), col("b_id"))
@@ -153,7 +148,6 @@ private[graft] object DedupQueries {
       // connected components of the confirmed near-dup pair graph (the
       // keep-one-representative step); pairs from the fast-FNV LSH path,
       // whose confirmed set equals ground truth on this corpus (q39)
-      GraftFunctions.register(s)
       val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id",
         "text", k = 16, bands = 4, shingleN = 3, threshold = 0.5,
         fast = true)
@@ -198,7 +192,6 @@ private[graft] object DedupQueries {
       // argmax is two partial-combined aggregates (max quality per
       // cluster, then min id among the maxima) — no cluster-partitioned
       // window, so a million-member spam cluster can't funnel one task.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
         bands = 4, shingleN = 3, threshold = 0.5, fast = true)
@@ -219,7 +212,6 @@ private[graft] object DedupQueries {
     QuerySpec("q58_simhash_pairs", ((s, dir) => {
       // block-banded SimHash candidates + exact Hamming verify
       // (recall 1.0 for hamming <= 3 by pigeonhole over 4 blocks)
-      GraftFunctions.register(s)
       Dedup.simhashNearDupPairs(t(s, dir, "documents"), "doc_id", "text",
           maxHamming = 3)
         .orderBy(col("a_id"), col("b_id"))
@@ -236,7 +228,6 @@ private[graft] object DedupQueries {
       // pointer-jumping label propagation as text dedup. One cluster id
       // per image that has at least one near-dup — the keep-one-
       // representative step for a media corpus.
-      GraftFunctions.register(s)
       val media = Multimodal.dhashMediaFromDocuments(t(s, dir, "documents"))
       val hashes = Multimodal.extractImageHashes(media).toDF()
       val pairs = Dedup.imageNearDupPairs(hashes, maxHamming = 3)
@@ -287,7 +278,6 @@ private[graft] object DedupQueries {
       // would DROP, and on whose account. threshold 0.4 for the same
       // reason as q42 (synthetic embeddings are near-orthogonal; the
       // positive path must be exercised at verify scale)
-      GraftFunctions.register(s)
       Dedup.semanticDedupDrops(t(s, dir, "embeddings"), "vec_id",
           "embedding", planes = 6, threshold = 0.4, exact = true)
         .select(col("id").as("vec_id"), col("dup_of"), col("n_earlier"))
@@ -320,7 +310,6 @@ private[graft] object DedupQueries {
       // best-matching eval item. Threshold 0.35 for the q42 reason
       // (near-orthogonal synthetic embeddings; the positive path must
       // be exercised at verify scale: 34 raw hits at sf0.01).
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       Dedup.semanticContamination(emb, emb.filter(col("vec_id") < 30),
           "vec_id", "embedding", threshold = 0.35, exact = true)
@@ -357,7 +346,6 @@ private[graft] object DedupQueries {
       // only pairs touching a new id form (old-vs-old never re-verifies).
       // Same index parameters as q37, so pairs(q37) =
       // pairs(even-only) ∪ this result.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       Dedup.minhashLshPairsIncremental(
           Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
@@ -418,7 +406,6 @@ private[graft] object DedupQueries {
       // Oracle = ground-truth all-pairs Jaccard restricted to pairs
       // touching a new (odd) id — equality doubles as an LSH recall=1.0
       // check, exactly as q39 pins the full fast path.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val idxDir = new java.io.File(
         s".bench/q70_index_${corpusKey(dir)}").getAbsolutePath
@@ -463,7 +450,6 @@ private[graft] object DedupQueries {
       // returns zero rows at verify scale and the oracle match is vacuous;
       // 0.4 keeps the gate exercising the positive path (5 rows at sf0.01,
       // 57 at sf0.1) through the same bucket/verify machinery
-      GraftFunctions.register(s)
       Dedup.embeddingNearDupPairs(t(s, dir, "embeddings"), "vec_id",
           "embedding", planes = 6, threshold = 0.4, exact = true)
         .orderBy(col("a_id"), col("b_id"))
@@ -494,7 +480,6 @@ private[graft] object DedupQueries {
       // own id spaces — pairs are NOT canonicalized, and at scale the
       // right side is the reference corpus's PERSISTED minhash index
       // (the q70 artifact), so linking never re-signatures it.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val srcNum = expr("int(substring(source, 4))")
       Dedup.fuzzyJoin(
@@ -556,7 +541,6 @@ private[graft] object DedupQueries {
       // over the contracted batch-sized graph, never the historical one).
       // Oracle = q54's ground-truth recursive closure over the FULL
       // corpus: incremental == full recompute, by construction.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val evens = docs.filter(col("doc_id") % 2 === 0)
       val key = corpusKey(dir)
@@ -671,7 +655,6 @@ private[graft] object DedupQueries {
       // OOMs instead of falling back. The pair side is candidate-
       // bounded, so the shuffled attach is cheap; AQE still broadcasts
       // the map when it is genuinely small.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
         k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = false)
@@ -740,7 +723,6 @@ private[graft] object DedupQueries {
       // their rarest shingles; the oracle BRUTE-FORCES the n² space, so
       // this is a genuine recall differential, not a blocking replay.
       val docs = t(s, dir, "documents")
-      GraftFunctions.register(s)
       Dedup.prefixFilterJaccardPairs(docs, "doc_id", "text",
           shingleN = 3, thetaNum = 1, thetaDen = 2)
         .orderBy(col("a_id"), col("b_id"))
@@ -779,7 +761,6 @@ private[graft] object DedupQueries {
       // in-engine on real data (the offline gate an LSH config change
       // must pass). Both pair sets are bounded; the rollup is 3 scalars.
       val docs = t(s, dir, "documents")
-      GraftFunctions.register(s)
       val exact = operators.Materializer.Local(
         Dedup.prefixFilterJaccardPairs(docs, "doc_id", "text",
           shingleN = 3, thetaNum = 1, thetaDen = 2)
@@ -880,7 +861,6 @@ private[graft] object DedupQueries {
       // dominant source by the two-step argmax, member/token mass. The
       // readout a dedup pipeline hands to curation: what each duplicate
       // family is, who contributes it, and which copy to keep.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
         bands = 4, shingleN = 3, threshold = 0.5, fast = true)
@@ -964,7 +944,6 @@ private[graft] object DedupQueries {
       // are salted-md5 functions of (term, seed), so DuckDB replays the
       // sampler draw-for-draw (round(9) requantization after every libm
       // call, arg-min tie-break on term asc).
-      GraftFunctions.register(s) // the verify's native map_min_sum
       Dedup.weightedMinhashPairs(t(s, dir, "documents"), "doc_id",
           "text", k = 8, bands = 4, thetaNum = 3, thetaDen = 5)
         .orderBy(col("a_id"), col("b_id"))
@@ -1072,7 +1051,6 @@ private[graft] object DedupQueries {
       // this corpus (q39); straddle counts are two id-keyed equi-joins
       // of the bounded pair set against the assignment table, and the
       // only broadcasts are 1-row aggregates.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val pairs = operators.Materializer.Local(
         Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16, bands = 4,
@@ -1171,7 +1149,6 @@ private[graft] object DedupQueries {
       // pair+CC pass (the shared clusterAwareSplit operator), two
       // partial-combined aggregates; the overall shares ride a 1-row
       // broadcast.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
           bands = 4, shingleN = 3, threshold = 0.5, fast = true)
@@ -1266,7 +1243,6 @@ private[graft] object DedupQueries {
       // query shows what 0.3–0.8 would each have done). Banding recall
       // below the design threshold is part of the pinned semantics —
       // the oracle replays the identical signature/band/verify pipeline.
-      GraftFunctions.register(s)
       val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"),
         "doc_id", "text", k = 16, bands = 4, shingleN = 3,
         threshold = 0.3, fast = false)
@@ -1292,7 +1268,6 @@ private[graft] object DedupQueries {
       // would miss across variant classes. Map-side normalization in
       // front of the standard banded pipeline — the scale shape is
       // q37's unchanged.
-      GraftFunctions.register(s)
       val injected = t(s, dir, "documents").select(col("doc_id"),
         when(col("doc_id") % 3 === 0,
             translate(col("text"), "aeo", "áéö"))
@@ -1337,7 +1312,6 @@ private[graft] object DedupQueries {
       // Composition of the q75 keep-best selection (LSH pairs -> CC ->
       // quality argmax) and the q311 integer recipe; the kept-id semi
       // join is UNHINTED (kept ids are SF-linear — one per cluster).
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
         bands = 4, shingleN = 3, threshold = 0.5, fast = true)
@@ -1417,7 +1391,6 @@ private[graft] object DedupQueries {
       // keep-best needs a similarity re-check. Pair edges are already
       // the bounded equi-join output; the census adds the oriented
       // wedge join only.
-      GraftFunctions.register(s)
       val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"),
           "doc_id", "text", k = 16, bands = 4, shingleN = 3,
           threshold = 0.5, fast = false)
@@ -1466,7 +1439,6 @@ private[graft] object DedupQueries {
       // and this query prices that disagreement. Each generator keeps
       // its own bounded equi-join plan; the Venn adds one (a, b)
       // exchange over the unioned pair sets.
-      GraftFunctions.register(s)
       val d = t(s, dir, "documents")
       val mh = Dedup.minhashLshPairs(d, "doc_id", "text", k = 16,
           bands = 4, shingleN = 3, threshold = 0.5, fast = false)

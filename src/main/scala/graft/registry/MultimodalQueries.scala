@@ -3,7 +3,6 @@ package registry
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.{Dedup, Multimodal}
 
 import SparkHelpers._
@@ -20,7 +19,6 @@ private[graft] object MultimodalQueries {
       // so the oracle predicts every bit arithmetically while Spark
       // recovers them from actual pixels; doc_id % 100 == 99 rows carry
       // undecodable bytes and must be flagged out, not hashed.
-      GraftFunctions.register(s)
       val media = Multimodal.dhashMediaFromDocuments(t(s, dir, "documents"))
       val hashes = Multimodal.extractImageHashes(media).toDF()
       Dedup.imageNearDupPairs(hashes, maxHamming = 3)
@@ -66,7 +64,6 @@ private[graft] object MultimodalQueries {
       // the timed body decodes + hashes ONLY the odd-id new batch and
       // joins its blocks against the on-disk index — the historical
       // corpus is never re-decoded. Old-vs-old pairs never form.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val media = Multimodal.dhashMediaFromDocuments(docs)
       val idxDir = new java.io.File(
@@ -216,7 +213,6 @@ private[graft] object MultimodalQueries {
       // pixel steps), so the two modalities share one oracle algebra;
       // doc_id % 100 == 99 rows carry undecodable bytes and must be
       // flagged out, not hashed.
-      GraftFunctions.register(s)
       val media = Multimodal.ahashMediaFromDocuments(t(s, dir, "documents"))
       val hashes = Multimodal.extractAudioHashes(media).toDF()
       Dedup.audioNearDupPairs(hashes, maxHamming = 3)
@@ -263,7 +259,6 @@ private[graft] object MultimodalQueries {
       // steps (raw-DIB is lossless), so all three modalities verify
       // against one oracle algebra; doc_id % 100 == 99 rows carry
       // undecodable bytes and must be flagged out, not hashed.
-      GraftFunctions.register(s)
       val media = Multimodal.vhashMediaFromDocuments(t(s, dir, "documents"))
       val hashes = Multimodal.extractVideoHashes(media).toDF()
       Dedup.videoNearDupPairs(hashes, maxHamming = 3)

@@ -4,7 +4,6 @@ package registry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.schema.ExportSchema
 import graft.transform.{ExportTransform, ValueFormat}
 
@@ -1172,7 +1171,6 @@ private[graft] object RelationalQueries {
       // sketches alone. The oracle replicates the sketch algebra exactly
       // (same md5, same lexicographic k-min, same merged-k intersection
       // count), so the estimate is hash-checked, not tolerance-gated.
-      GraftFunctions.register(s)
       operators.Overlap.sliceOverlap(t(s, dir, "documents"), "lang", "text",
           shingleN = 3, k = 256)
         .orderBy(col("slice_a"), col("slice_b"))
@@ -1552,7 +1550,6 @@ private[graft] object RelationalQueries {
       // rows drop MAP-SIDE before the join shuffle. Result == the plain
       // join (no false negatives; the join kills false positives) —
       // the oracle is the unpruned join.
-      functions.GraftFunctions.register(s)
       val li = t(s, dir, "lineitem")
       val dim = t(s, dir, "part").filter(col("p_size") === 1)
       operators.Skew.bloomPrunedJoin(li, dim, "l_partkey", "p_partkey")
@@ -4639,7 +4636,6 @@ private[graft] object RelationalQueries {
       // shards, and in the sharded-ANALYZE deployment each shard's
       // (tok, c) histogram is machine-local by construction. The
       // summarization body is Stats.heavyHitterBracket.
-      GraftFunctions.register(s)
       val toks = t(s, dir, "documents").select(
         operators.Sharding.shardOf("doc_id", 4).as("shard"),
         explode(operators.TextAnalysis.tokens(col("text"))).as("tok"))

@@ -3,7 +3,6 @@ package registry
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.{Similarity, TextAnalysis}
 
 import SparkHelpers._
@@ -37,7 +36,6 @@ private[graft] object SimilarityQueries {
         |FROM m ORDER BY vec_id""".stripMargin),
 
     QuerySpec("q40_knn_brute", ((s, dir) => {
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 30), k = 5,
           exact = true)
@@ -78,7 +76,6 @@ private[graft] object SimilarityQueries {
     QuerySpec("q41_ann_lsh", ((s, dir) => {
       // LSH-bucketed ANN with exact re-rank — oracle-checkable (portable
       // md5-derived hyperplanes + decimal-exact cosine)
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30), k = 5,
           planes = 8, exact = true)
@@ -114,7 +111,6 @@ private[graft] object SimilarityQueries {
       // multi-probe LSH (probeBits=1): each query additionally probes the
       // planes buckets at Hamming distance 1 — the recall knob,
       // correctness-pinned against the oracle's probe expansion
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30), k = 5,
           planes = 8, exact = true, probeBits = 1)
@@ -154,7 +150,6 @@ private[graft] object SimilarityQueries {
       // contrastive hard-negative mining: 5 nearest DIFFERENT-label
       // neighbors per query — the label-mismatch predicate rides the
       // broadcast join map-side; same bounded-heap shape as q40
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       Similarity.hardNegativesTopK(emb, emb.filter(col("vec_id") < 30),
           k = 5, exact = true)
@@ -190,7 +185,6 @@ private[graft] object SimilarityQueries {
       // chunk. Model-free baseline wired through the same interface a
       // real embedding column would use; queries = the chunks of docs
       // 0-2 against the whole chunk corpus.
-      GraftFunctions.register(s)
       val chunks = TextAnalysis.chunkDocuments(t(s, dir, "documents"),
           "doc_id", "text", chunkLen = 64, stride = 48)
         .select((col("doc_id") * 1000 + col("chunk_id")).cast("long")
@@ -248,7 +242,6 @@ private[graft] object SimilarityQueries {
       // recall floor against the exact brute-force top-k computed in the
       // same job (the q19 pattern: the oracle emits TRUE, and a recall
       // collapse becomes a hash mismatch, not a vacuous row).
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val qs = emb.filter(col("vec_id") < 30)
       val cb = pqCodebookFor(s, dir, emb)
@@ -286,7 +279,6 @@ private[graft] object SimilarityQueries {
       // body is probe + ADC only — the float vectors are never scanned
       // at search time. Gate = the q72 pattern: exact per-query result
       // counts + a recall floor vs the in-job brute-force ground truth.
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val qs = emb.filter(col("vec_id") < 30)
       val cb = pqCodebookFor(s, dir, emb)
@@ -319,7 +311,6 @@ private[graft] object SimilarityQueries {
 
     QuerySpec("q46_ann_ivf", ((s, dir) => {
       // IVF cell-probe ANN; seeds = first 8 vectors — oracle-checkable
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 30),
           emb.filter(col("vec_id") < 8), k = 5, exact = true)
@@ -406,7 +397,6 @@ private[graft] object SimilarityQueries {
       // row-identical to a full rebuild (OperatorsSpec pins it); the
       // oracle gate is the q77 contract: exact per-query counts + a
       // recall floor vs in-job brute force.
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val hist = emb.filter(col("vec_id") % 10 =!= 9)
       val fresh = emb.filter(col("vec_id") % 10 === 9)
@@ -464,7 +454,6 @@ private[graft] object SimilarityQueries {
       // would sample. The df cap drops the Zipf head from the
       // similarity space BEFORE the pair join — the lever that bounds
       // per-term fanout at 100 TB.
-      GraftFunctions.register(s)
       operators.Retrieval.sparseCosinePairs(t(s, dir, "documents"),
           "doc_id", "text", maxDf = 1000L, threshold = 0.3, shingleN = 4)
         .orderBy(col("a_id"), col("b_id"))
@@ -514,7 +503,6 @@ private[graft] object SimilarityQueries {
       // retrievers. Both inputs are top-k lists, so the fusion itself
       // is one tiny partial-combined sum — the heavy work stays inside
       // the retrievers.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
       val lex = operators.Retrieval.bm25(docs, "doc_id", "text",
@@ -618,7 +606,6 @@ private[graft] object SimilarityQueries {
       // query. The run is top-k and qrels are an eval set, so every
       // metric join is eval-set-sized regardless of corpus size: this is
       // the gate an index/tokenizer change must pass before swap-in.
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 8)
       val run = Similarity.bruteForceTopK(emb, queries, k = 10,
@@ -701,7 +688,6 @@ private[graft] object SimilarityQueries {
       // maxDf drops corpus-frequent shingles BEFORE the pair join; the
       // ratio is an exact integer quotient, so nothing float-sensitive
       // crosses engines.
-      GraftFunctions.register(s)
       operators.Retrieval.containmentPairs(t(s, dir, "documents"),
           "doc_id", "text", shingleN = 3, maxDf = 50, threshold = 0.8)
         .orderBy(col("a_id"), col("b_id"))
@@ -1107,7 +1093,6 @@ private[graft] object SimilarityQueries {
       // candidate set CAN displace a true neighbor under ADC error, so
       // exact monotonicity is not a theorem; observed 70/94/101 of 300
       // at sf0.01, 52/54/59 at sf0.1).
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val qs = emb.filter(col("vec_id") < 30)
       val cb = pqCodebookFor(s, dir, emb)
@@ -1161,7 +1146,6 @@ private[graft] object SimilarityQueries {
       // distributed (the pair table is 20×20 bounded); the greedy itself
       // is bounded driver work over collected constants (the
       // q199/q204 precedent), BigDecimal HALF_UP mirroring Column.round.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val cand = operators.Materializer.Local(
         operators.Retrieval.bm25(docs, "doc_id", "text",
@@ -1276,7 +1260,6 @@ private[graft] object SimilarityQueries {
       // ≥k duplicate points make lrd infinite in the paper's
       // definition — guarded to NULL here, identically in the oracle.
       val emb = t(s, dir, "embeddings")
-      GraftFunctions.register(s)
       val k = 10
       val knn = operators.Materializer.Local(
         operators.Similarity.bruteForceTopK(emb, emb, k = k,
@@ -1467,7 +1450,6 @@ private[graft] object SimilarityQueries {
       // an ANN deployment gates on. On THIS corpus's near-random
       // embeddings the descent climbs 0.32→0.60→0.79 over the rounds —
       // the honest convergence the paper shows on structured data.
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val g = Similarity.nnDescentGraph(emb, k = 10, rounds = 3)
       val truth = Similarity.bruteForceTopK(emb,
@@ -1501,7 +1483,6 @@ private[graft] object SimilarityQueries {
       // what the from-scratch build's 3 descent rounds reach (0.79)
       // at a fraction of the work, vs ~0.32 for a bucket-only probe
       // (q286's round-0 level).
-      GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val base = emb.filter(col("vec_id") >= 50)
       val fresh = emb.filter(col("vec_id") < 50)

@@ -4,7 +4,6 @@ package registry
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 
 /** Spark-side helpers shared by the query bodies: table access, exact
@@ -220,7 +219,6 @@ private[graft] object SparkHelpers {
     * dedup keep-min, near-dup drop, decontamination, langid, quality).
     * Stage flags are computed once per doc on the full corpus. */
   def funnelCum(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val d = t(s, dir, "documents")
     val tk = operators.TextAnalysis.tokens(col("text"))
     val flags0 = d.select(col("doc_id"),

@@ -4,7 +4,6 @@ package registry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.{Sampling, TextAnalysis}
 
 import SparkHelpers._
@@ -3011,7 +3010,6 @@ private[graft] object StatsQueries {
       // broadcast shingle equi-join and checkpoints; each greedy round
       // is ONE marginal-gain aggregate + a 1-row broadcast coverage
       // update, exact DECIMAL end to end.
-      GraftFunctions.register(s)
       operators.Sampling.facilityLocationSelect(t(s, dir, "documents"),
           "doc_id", "text", nCand = 30, k = 5, shingleN = 3)
         .orderBy(col("rk"))

@@ -122,7 +122,6 @@ private[graft] object TextAnalysisQueries {
 
     QuerySpec("q56_doc_repetition", ((s, dir) => {
       // Gopher-style repetition quality signals
-      GraftFunctions.register(s)
       val toks = TextAnalysis.tokens(col("text"))
       val total = size(toks).cast("double")
       t(s, dir, "documents").select(col("doc_id"),
@@ -210,7 +209,6 @@ private[graft] object TextAnalysisQueries {
       // shingles shared with the "eval set" (doc_id < 10 here) — the
       // pre-training overlap check. Eval shingles broadcast; the corpus
       // side is map-side explode + broadcast join + partial count
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       TextAnalysis.contaminationOverlap(docs,
           docs.filter(col("doc_id") < 10), "doc_id", "text", n = 5)
@@ -223,7 +221,6 @@ private[graft] object TextAnalysisQueries {
       // CCNet-style boilerplate: 3-gram passages occurring in >= 5 distinct
       // docs are corpus boilerplate; per-doc fraction of such passages.
       // One (shingle, count) shuffle; the Zipf head broadcasts back.
-      GraftFunctions.register(s)
       TextAnalysis.boilerplateStats(t(s, dir, "documents"),
           "doc_id", "text", n = 3, minDf = 5)
         .orderBy(col("doc_id"))
@@ -256,7 +253,6 @@ private[graft] object TextAnalysisQueries {
       // cuts merge, only affected docs are rewritten. One corpus-wide
       // (span, count) partial-combined shuffle; rewrite is a map-side HOF
       // over affected docs only.
-      GraftFunctions.register(s)
       TextAnalysis.spanDedup(t(s, dir, "documents"),
           "doc_id", "text", n = 6, minOcc = 2)
         .orderBy(col("doc_id"))
@@ -339,7 +335,6 @@ private[graft] object TextAnalysisQueries {
       // count is exact, not gated. Corpus-trained tables come from
       // Bpe.train (spec-pinned); tokenization itself is a map-side
       // projection either way.
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_words"),
@@ -376,7 +371,6 @@ private[graft] object TextAnalysisQueries {
       // mergeable — the defining property of a completed BPE encode),
       // and count bounds (n_words <= n_bpe <= non-space chars). A
       // broken trainer or encoder flips a boolean and hash-mismatches.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val merges = Bpe.train(docs, "text", nMerges = 50)
       val mergeKeys = merges.map { case (a, b) => a + " " + b }
@@ -473,7 +467,6 @@ private[graft] object TextAnalysisQueries {
       // might_contain prefilter -> shuffle-join verify on the surviving
       // sliver. Same answer as q68 (bloom has no false negatives; the
       // verify join kills false positives) — same oracle SQL.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       TextAnalysis.contaminationOverlapBloom(docs,
           docs.filter(col("doc_id") < 10), "doc_id", "text", n = 5)
@@ -623,7 +616,6 @@ private[graft] object TextAnalysisQueries {
       // engine-portable md5-window boundary rule). Zero shuffle until the
       // digest dup-count exchange; the cut scan is one codegen'd kernel
       // pass per row (CdcPairs).
-      GraftFunctions.register(s)
       TextAnalysis.cdcChunks(t(s, dir, "documents"), "doc_id", "text",
           w = 8)
         .select(col("id").as("doc_id"), col("chunk_id"), col("start_pos"),
@@ -665,7 +657,6 @@ private[graft] object TextAnalysisQueries {
       // by. Same two-phase distributed prefix sum; only the per-doc
       // counter changes, and the oracle replays both the merge algebra
       // and the packing algebra exactly.
-      GraftFunctions.register(s)
       TextAnalysis.packSequences(t(s, dir, "documents"), "doc_id", "text",
           seqLen = 2048, counter = Some(
             Bpe.tokenCount(col("text"), Bpe.FixtureMerges)))
@@ -1226,7 +1217,6 @@ private[graft] object TextAnalysisQueries {
       // diversity-aware sampling signal; the shingle-keyed join is
       // unhinted (the src0 slice is SF-linear — Heaps-growing shingles),
       // swap the q90 bloom prefilter when even the shuffle is too wide.
-      functions.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       TextAnalysis.noveltyVsReference(
           docs.filter(col("source") =!= "src0"),
@@ -1338,7 +1328,6 @@ private[graft] object TextAnalysisQueries {
       // repetition (q56), language (q32) and length percentile rank
       // (q177, broadcast join-back) fold into one keep/drop decision —
       // the headline composition of the per-doc signal family.
-      functions.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val pr = operators.Stats.percentileRanks(docs, "n_chars")
         .select(col("v").as("n_chars_v"), col("pct_rank").as("len_pr"))
@@ -1609,7 +1598,6 @@ private[graft] object TextAnalysisQueries {
       // equity metric (a language with fertility 2× pays 2× the context
       // budget per word). Map-side native tokenizer, one lang-keyed
       // aggregate.
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .select(col("lang"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("nw"),
@@ -1783,7 +1771,6 @@ private[graft] object TextAnalysisQueries {
       // (source, shingle) partial-combined exchange; everything after
       // is source-sized. Exact integer counts; the two derived values
       // are single pinned double divisions + round(6).
-      GraftFunctions.register(s)
       val tk = t(s, dir, "documents").select(col("source"),
         explode(operators.TextAnalysis.shingles(col("text"), 3))
           .as("term"))
@@ -1939,7 +1926,6 @@ private[graft] object TextAnalysisQueries {
       // the winnowing join answers "do they share a literal local run" —
       // at a ~2/(w+1) sampling rate the corpus never pays full-text
       // comparison for.
-      GraftFunctions.register(s)
       val fps = operators.TextAnalysis.winnowingFingerprints(
         t(s, dir, "documents"), "doc_id", "text", k = 4, w = 4)
       val fpd = fps.select(col("id"), col("h")).distinct()
@@ -2396,7 +2382,6 @@ private[graft] object TextAnalysisQueries {
       // 16 corpus passes. The subset/weight enumeration is a Scala
       // constant shared VERBATIM with the oracle's VALUES (the
       // shapleySubsets contract).
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val base = docs.select(
         expr("CAST(substring(source, 4, 10) AS INT) % 4").as("g"),
@@ -2843,7 +2828,6 @@ private[graft] object TextAnalysisQueries {
       // exercises the automaton's suffix-output links. Counting is
       // greedy leftmost non-overlapping per pattern = the replace()-
       // count every SQL engine replays.
-      GraftFunctions.register(s)
       TextAnalysis.blocklistScan(t(s, dir, "documents"),
         "source", "text", blocklistPatterns)
     }),
@@ -3002,7 +2986,6 @@ private[graft] object TextAnalysisQueries {
       // native-expression pass (functions.CharEntropy, 9-decimal-
       // pinned, order-independent), replayed by the oracle from a
       // per-character GROUP BY.
-      GraftFunctions.register(s)
       val noisy = t(s, dir, "documents").select(col("source"),
         when(col("doc_id") % 13 === 0, lit("spam " * 40))
           .otherwise(col("text")).as("text"))
@@ -3197,7 +3180,6 @@ private[graft] object TextAnalysisQueries {
       // O(trie edges) — where a LIKE-per-pattern plan would re-scan
       // every document 3375 times. Only (source, pattern) rows with
       // hits survive; zero-hit patterns are dropped in both engines.
-      GraftFunctions.register(s)
       TextAnalysis.blocklistScan(t(s, dir, "documents"),
         "source", "text", dictBlocklistPatterns, dropZeroHits = true)
     }),
@@ -3276,7 +3258,6 @@ private[graft] object TextAnalysisQueries {
       // replacement) and encoding noise (%7/%9/%11 suffixes — keys
       // coprime with the source assignment) identically in both
       // engines so every stage has real attrition.
-      GraftFunctions.register(s)
       val base = when(col("doc_id") % 13 === 0, expr("repeat('spam ', 40)"))
         .otherwise(coalesce(col("text"), lit("")))
       val injected = t(s, dir, "documents").select(col("doc_id"),
@@ -3295,14 +3276,14 @@ private[graft] object TextAnalysisQueries {
       // zero greedy-count sum == no pattern occurs at all, so the
       // automaton doubles as a multi-phrase boolean gate in one walk
       val hitsum = aggregate(
-        call_function("blocklist_hits", lower(col("text")),
+        GraftFunctions.blocklist_hits(lower(col("text")),
           typedlit(funnelBlocklist)),
         lit(0L), (a, x) => a + x)
       operators.Sampling.filterFunnel(injected, Seq(
         "min_tokens" -> (TextAnalysis.tokenCount(col("text")) >= 20),
         "encoding_clean" -> (!repl && !ctrl && !moji),
         "entropy" ->
-          (round(call_function("char_entropy", col("text")), 6) >= 3.0),
+          (round(GraftFunctions.char_entropy(col("text")), 6) >= 3.0),
         "blocklist_clean" -> (hitsum === 0L)))
         .orderBy(col("stage_id"))
     }),

@@ -4,7 +4,6 @@ package registry
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.{Bpe, Dedup, Multimodal, Sampling, Sessionize, Similarity, TextAnalysis}
 import graft.schema.ExportSchema
 import graft.transform.{ExportTransform, ValueFormat}

@@ -7,7 +7,7 @@ import java.time.{Duration, Instant}
 import scala.jdk.OptionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.service.RetryPolicy
@@ -164,7 +164,12 @@ class HttpExportSource(spark: SparkSession, client: HttpExportClient,
     val in = client.download(exportId)
     val dest = new Path(s"$stagingDir/$exportId")
     staged.put(exportId, dest)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the file is read once and deleted: a local download skips the
+    // checksum layer (no .crc beside it, no permission set on it)
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
     val out = fs.create(dest, true)
     try {
       val buf = new Array[Byte](64 * 1024)

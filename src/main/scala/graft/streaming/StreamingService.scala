@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.time.Instant
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -27,7 +28,12 @@ import graft.transform.{ExportTransform, ValueFormat}
   *     stream fully drains, so a crash mid-stream is healed by the next
   *     run (batch or streaming — the sync protocol is shared);
   *   - the committed sync point is THE SAME instant the batch loop would
-  *     commit: the last mature window end (pinned by MainSpec).
+  *     commit: the last mature window end (pinned by MainSpec);
+  *   - the sync point is the only progress record: the stream's
+  *     checkpoint lives for one drain and is deleted before the next.
+  *     A file source checkpoint marks whole files as seen, so a kept one
+  *     would never re-read a file's records past this run's window end,
+  *     nor rows a failed commit healed away.
   *
   * The streaming source is the SAME DSv2 connector the batch path scans
   * with (`graft-export`, micro-batch capability): gzip detection,
@@ -65,6 +71,8 @@ object StreamingService {
     // the range rides as source OPTIONS (streaming scans get no filter
     // pushdown from Catalyst); the post-scan filter restates the same
     // bounds as a cheap semantic guard
+    val ckpt = new Path(checkpointDir)
+    ckpt.getFileSystem(spark.sessionState.newHadoopConf()).delete(ckpt, true)
     val raw = spark.readStream
       .format("graft-export")
       .option("startTime", lastSync.toString)

@@ -40,6 +40,28 @@ class FanOutSpec extends SparkSpec {
     assert(out eq df)
   }
 
+  test("FanOut returns a shuffle-bearing frame unchanged without running a job") {
+    // under AQE, probing an aggregate's partitioning through `.rdd` runs
+    // its upstream stages at plan time; the contract check must not
+    val agg = (1 to 100).toDF("x").groupBy(($"x" % 3).as("k")).count()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val out = try {
+      val o = operators.FanOut(agg)
+      org.apache.spark.ListenerBusDrain(sc)
+      o
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0)
+    assert(out eq agg)
+  }
+
   test("basket-explode pair counts == orderkey self-join pair counts") {
     // order 1: parts 10,20,30; order 2: parts 10,20 (pair support 2);
     // order 3: part 40 twice + 50 (duplicate part: no (40,40) pair,

@@ -251,8 +251,16 @@ class HttpClientSpec extends SparkSpec {
     try {
       val tmp = Files.createTempDirectory("graft-http-e2e")
       val client = new HttpExportClient(stub.url, Token)
-      val source = new HttpExportSource(spark, client,
-        tmp.resolve("staging").toString)
+      val downloads = tmp.resolve("_downloads")
+      // the names in the download directory right after each download
+      val listed = ArrayBuffer[String]()
+      val source = new HttpExportSource(spark, client, downloads.toString) {
+        override def getExport(exportId: String) = {
+          val df = super.getExport(exportId)
+          Files.list(downloads).forEach(f => listed += f.getFileName.toString)
+          df
+        }
+      }
       val storage = new HadoopStorage(tmp.resolve("stage").toString)
       val wh = new ParquetWarehouse(spark, tmp.resolve("wh").toString)
       val svc = new ExportService(spark,
@@ -270,7 +278,9 @@ class HttpClientSpec extends SparkSpec {
       // every bundle's wire download was staged for the DSv2 reader, and
       // deleted once its bundle committed: nothing is left behind
       assert(stub.requests.count(_._2.startsWith("/dl/")) == 4)
-      assert(!Files.list(tmp.resolve("staging")).iterator().hasNext)
+      assert(!Files.list(downloads).iterator().hasNext)
+      // a download is written without a checksum file beside it
+      assert(listed.nonEmpty && !listed.exists(_.endsWith(".crc")), listed)
     } finally stub.stop()
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
 /** The native expressions must be usable from plain SQL, both via
-  * GraftFunctions.register and via the GraftExtensions session hook. */
+  * GraftFunctions.register and via the GraftExtensions session hook, and
+  * the queries must need neither. */
 class SqlFunctionsSpec extends SparkSpec {
 
   test("native functions callable from SQL") {
@@ -24,17 +25,54 @@ class SqlFunctionsSpec extends SparkSpec {
     assert(bucket >= 0 && bucket < 256)
   }
 
-  test("GraftExtensions registers all four function descriptions cleanly") {
-    // builder-level injection applies on session instantiation (the shared
-    // test session already exists); assert the injection itself is sound
-    val exts = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions()(exts) // must not throw
-    // and the injected builders construct valid expressions
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val expr = graft.functions.CosineSimilarity(
-      Literal.create(Array(1f, 0f)), Literal.create(Array(1f, 0f)))
-    assert(expr.checkInputDataTypes().isSuccess)
-    assert(expr.eval(null) == 1.0)
+  test("GraftExtensions resolves every SQL name of the function table") {
+    // extensions apply when a session is built: build one on the shared
+    // context, then hand the shared session back to the other suites
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = try SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions()).getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+    assert(ext ne spark)
+    val reg = ext.sessionState.functionRegistry
+    for (f <- graft.functions.GraftFunctions.sqlFunctions) {
+      assert(reg.lookupFunction(FunctionIdentifier(f.name)).map(_.getUsage)
+        .contains(f.usage), f.name)
+      assert(reg.lookupFunctionBuilder(FunctionIdentifier(f.name)).isDefined,
+        f.name)
+    }
+    assert(ext.sql(
+      "SELECT cosine_sim(array(1.0f, 0.0f), array(1.0f, 0.0f)) AS s")
+      .collect()(0).getDouble(0) == 1.0)
+    assert(ext.sql("SELECT char_entropy('abab') AS h")
+      .collect()(0).getDouble(0) == 1.0)
+    assert(ext.sql("SELECT blocklist_hits('a b a', array('a', 'b')) AS h")
+      .collect()(0).getSeq[Long](0) == Seq(2L, 1L))
+  }
+
+  test("queries run on a session with no graft function installed and " +
+      "leave its functions alone") {
+    // a fresh session: nothing graft installed, and a user function that
+    // shares a graft SQL name
+    val s2 = spark.newSession()
+    s2.udf.register("char_entropy", (_: String) => -1.0)
+    def names = s2.catalog.listFunctions().collect().map(_.name).toSet
+    val before = names
+    val dir = "/root/testdata/sf0.001"
+    for (q <- Seq("q304_weighted_neardup", "q40_knn_brute",
+                  "q325_content_funnel")) {
+      def rows(s: org.apache.spark.sql.SparkSession) =
+        SparkEntry.queries(q)(s, dir).collect().toSeq
+      assert(rows(s2) == rows(spark), q)
+    }
+    assert(names == before)
+    assert(s2.sql("SELECT char_entropy('abab')").collect()(0).getDouble(0)
+      == -1.0)
   }
 
   test("map_min_sum's sorted merge runs where Spark's testing guard is on") {

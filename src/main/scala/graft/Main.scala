@@ -53,7 +53,7 @@ object Main {
     // key): a hung object-store call fails the bundle after the bound and
     // falls into the loop's backoff path instead of hanging the service
     val baseStorage = new HadoopStorage(need("StageDir"))
-    val storageTimeout = kv.get("Provider") match {
+    val storageTimeout = config.provider match {
       case Some("aws") => kv.get("s3.Timeout")
       case Some("gcp") => kv.get("gcs.Timeout")
       case _ => None
@@ -68,7 +68,7 @@ object Main {
         // Provider = "gcp" selects the BigQuery-flavor recovery strategy
         // (day-rewind + truncate-on-reload), like the reference's provider
         // factory (core/core.go:18-51)
-        case None if kv.get("Provider").contains("gcp") =>
+        case None if config.provider.contains("gcp") =>
           Some(new graft.sinks.BigQueryParquetWarehouse(spark,
             need("WarehouseDir")))
         case None => Some(new ParquetWarehouse(spark, need("WarehouseDir")))

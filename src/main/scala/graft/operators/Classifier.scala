@@ -65,12 +65,12 @@ object QualityClassifier {
     * re-runs the regex/tokenize feature projection over the corpus:
     * measured 26.7 → 3.0 s at sf0.1 for 32 iterations). */
   def trainLogReg(docs: DataFrame, textCol: String, label: Column,
-                  iters: Int = 8, eta: Double = 1.0,
-                  mat: Materializer = Materializer.Local): Array[Double] = {
+                  iters: Int = 8, eta: Double = 1.0): Array[Double] = {
     val xs = features(col(textCol))
-    val base = mat(docs.select((xs :+ label.cast("double").as("y"))
-      .zipWithIndex.map { case (c, j) =>
-        if (j < xs.size) c.as(s"x$j") else c }: _*))
+    val base = Materializer.Local(
+      docs.select((xs :+ label.cast("double").as("y"))
+        .zipWithIndex.map { case (c, j) =>
+          if (j < xs.size) c.as(s"x$j") else c }: _*))
     val n = base.count().toDouble
     val w = Array.fill(xs.size)(0.0)
     if (n == 0) return w
@@ -143,32 +143,28 @@ object NaiveBayes {
     * The corpus is deliberately scanned per phase (train counts, test
     * scoring) — the whiten/heavyHitters multi-pass precedent: caching a
     * corpus-scale token explode would cost more than the second scan.
-    * The vocab-bounded model table IS materialized (`mat`): it feeds
+    * The vocab-bounded model table IS materialized: it feeds
     * both the V count (a driver action) and the scoring join. */
   def confusionMatrix(docs: DataFrame, idCol: String, textCol: String,
-                      labelCol: String, trainHexMax: String = "c",
-                      mat: Materializer = Materializer.Local): DataFrame =
+                      labelCol: String, trainHexMax: String = "c"): DataFrame =
     confusionMatrixWithSplit(docs, idCol, textCol, labelCol,
-      isTrain(col(idCol), trainHexMax), mat)
+      isTrain(col(idCol), trainHexMax))
 
   /** [[confusionMatrix]] with an arbitrary train-membership predicate —
     * the hook k-fold cross-validation plugs its fold complements into. */
   def confusionMatrixWithSplit(docs: DataFrame, idCol: String,
                                textCol: String, labelCol: String,
-                               trainPred: Column,
-                               mat: Materializer = Materializer.Local)
-      : DataFrame =
+                               trainPred: Column): DataFrame =
     confusionMatrixFromBase(docs.select(col(idCol).as("nb_id"),
       col(labelCol).as("actual"),
       TextAnalysis.tokens(lower(col(textCol))).as("tk"),
-      trainPred.as("is_train")), mat)
+      trainPred.as("is_train")))
 
   /** [[confusionMatrixWithSplit]] over a pre-built
     * (nb_id, actual, tk, is_train) frame — the hook that lets k-fold
     * cross-validation tokenize the corpus ONCE per fold (or once total)
     * instead of once per phase per fold. */
-  private[operators] def confusionMatrixFromBase(base: DataFrame,
-      mat: Materializer = Materializer.Local): DataFrame = {
+  private[operators] def confusionMatrixFromBase(base: DataFrame): DataFrame = {
     val train = base.where(col("is_train"))
 
     // per-class scalars: doc count (prior) + token mass (denominator)
@@ -186,7 +182,7 @@ object NaiveBayes {
     val cntAggs = labels.zipWithIndex.map { case (l, i) =>
       sum(when(col("actual") === lit(l), 1L).otherwise(0L)).as(s"c_$i")
     }.toIndexedSeq
-    val cnt = mat(train
+    val cnt = Materializer.Local(train
       .select(col("actual"), explode(col("tk")).as("token"))
       .groupBy(col("token"))
       .agg(cntAggs.head, cntAggs.tail: _*))
@@ -245,15 +241,14 @@ object NaiveBayes {
     * each the one-aggregate NB fit). Returns
     * (fold, n_test, n_correct, accuracy). */
   def crossValAccuracy(docs: DataFrame, idCol: String, textCol: String,
-                       labelCol: String,
-                       mat: Materializer = Materializer.Local): DataFrame = {
+                       labelCol: String): DataFrame = {
     // tokenize the corpus ONCE for all four folds: the lazy per-phase
     // formulation re-tokenized per reference — 4 references per fold x
     // 4 folds = 16 corpus tokenize passes for one fold-sized output.
     // The materialized frame is (id, label, tokens, fold hex) — the same
     // corpus-scale artifact the single-split path deliberately does NOT
     // cache; a 4-fold run amortizes it 16x, which flips that trade.
-    val toked = mat(docs.select(col(idCol).as("nb_id"),
+    val toked = Materializer.Local(docs.select(col(idCol).as("nb_id"),
       col(labelCol).as("actual"),
       TextAnalysis.tokens(lower(col(textCol))).as("tk"),
       substring(md5(col(idCol).cast("string")), 1, 1).as("fh")))
@@ -262,7 +257,7 @@ object NaiveBayes {
       val isTest = col("fh") >= lit(lo) && col("fh") <= lit(hi)
       confusionMatrixFromBase(
           toked.select(col("nb_id"), col("actual"), col("tk"),
-            (!isTest).as("is_train")), mat)
+            (!isTest).as("is_train")))
         .agg(sum(col("n")).as("n_test"),
           sum(when(col("actual") === col("predicted"), col("n"))
             .otherwise(0L)).as("n_correct"))

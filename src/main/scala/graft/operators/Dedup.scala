@@ -83,9 +83,7 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       k: Int = 16, bands: Int = 4, shingleN: Int = 3,
                       threshold: Double = 0.5,
-                      fast: Boolean = true,
-                      materialize: Materializer = Materializer.Local)
-      : DataFrame = {
+                      fast: Boolean = true): DataFrame = {
     // Shingle sets and banded signatures are computed ONCE per document in
     // a single native pass (signature + banding fused — slicing a signature
     // column into bands would re-evaluate it per band); the candidate join
@@ -101,8 +99,8 @@ object Dedup {
     // pass (the query's dominant cost) runs three times over the corpus.
     // The artifact is the (id, shingles, band keys) dedup index — the
     // natural thing to persist at scale anyway (Materializer.Persisted
-    // exports it; see [[Materializer]] for the executor-loss contract).
-    val prepared = materialize(
+    // exports it).
+    val prepared = Materializer.Local(
       minhashIndex(docs, idCol, textCol, k, bands, shingleN, fast))
     // explode_outer, not explode: the band array is never empty, and plain
     // explode makes Catalyst infer a size(bandkeys)>0 scan filter that
@@ -156,17 +154,15 @@ object Dedup {
     * pipeline can append the result to its confirmed-pair log and the new
     * index rows to the persisted index. */
   def minhashLshPairsIncremental(newIndex: DataFrame, index: DataFrame,
-                                 threshold: Double = 0.5,
-                                 materialize: Materializer =
-                                   Materializer.Local): DataFrame = {
+                                 threshold: Double = 0.5): DataFrame = {
     // both sides pinned: `fresh` is referenced twice (its own banding +
     // inside `all`) and `all` three times (banding + both verify re-attach
     // sides) — Catalyst recomputes an uncached subtree per reference, and
     // for a freshly-computed index that means re-signaturing. When `index`
     // is what it should be at scale — a parquet-backed persisted artifact —
     // its re-scan is already cheap and the materialize is a no-op cost.
-    val fresh = materialize(newIndex)
-    val all = materialize(fresh.unionByName(index))
+    val fresh = Materializer.Local(newIndex)
+    val all = Materializer.Local(fresh.unionByName(index))
     val newBanded = fresh
       .select(col("id"), explode_outer(col("bandkeys")).as("bandkey"))
     val allBanded = all
@@ -211,14 +207,13 @@ object Dedup {
     * shingle-Jaccard verify on candidates only, re-attaching each side's
     * precomputed shingle set by id. */
   def fuzzyJoin(leftIndex: DataFrame, rightIndex: DataFrame,
-                threshold: Double = 0.5,
-                materialize: Materializer = Materializer.Local): DataFrame = {
+                threshold: Double = 0.5): DataFrame = {
     // both sides pinned: each index is referenced twice (banding + its
     // verify re-attach side) and Catalyst re-executes an uncached subtree
     // per reference — for freshly-built indexes that is the whole
     // signature pass run twice
-    val li = materialize(leftIndex)
-    val ri = materialize(rightIndex)
+    val li = Materializer.Local(leftIndex)
+    val ri = Materializer.Local(rightIndex)
     val lBanded = li
       .select(col("id"), explode_outer(col("bandkeys")).as("bandkey"))
     val rBanded = ri
@@ -264,27 +259,23 @@ object Dedup {
     *
     * Input: (a_id, b_id) pairs (a_id < b_id). Output: (doc_id, cluster_id)
     * for every document that appears in at least one pair. */
-  def nearDupClusters(pairs: DataFrame,
-                      materialize: Materializer = Materializer.Local)
-      : DataFrame =
-    nearDupClustersWithRounds(pairs, materialize)._1
+  def nearDupClusters(pairs: DataFrame): DataFrame =
+    nearDupClustersWithRounds(pairs)._1
 
   /** [[nearDupClusters]] plus the number of rounds the fixpoint loop ran —
     * the O(log diameter) bound is a tested property, not a comment. */
-  def nearDupClustersWithRounds(pairs: DataFrame,
-                                materialize: Materializer =
-                                  Materializer.Local): (DataFrame, Int) = {
+  def nearDupClustersWithRounds(pairs: DataFrame): (DataFrame, Int) = {
     // the pair set is materialized BEFORE the symmetrizing union: the
     // union references `pairs` twice, and Catalyst re-executes an
     // uncached subtree per reference — for an expensive generator
     // (banded join + verify over a 100 TB corpus) that is the whole
     // candidate search run twice (measured: large q84 46 -> ~34 s)
-    val p0 = materialize(
+    val p0 = Materializer.Local(
       pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
-    val edges = materialize(
+    val edges = Materializer.Local(
       p0.union(p0.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
-    var labels = materialize(edges.select(col("src").as("id")).distinct()
+    var labels = Materializer.Local(edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     var changed = 1L
     var rounds = 0
@@ -310,7 +301,7 @@ object Dedup {
       // component; the inner join is total (every label value has a
       // label row). `chg` rides along so the convergence count is a
       // filter over the checkpointed result, not a fresh join.
-      val next = materialize(l1
+      val next = Materializer.Local(l1
         .join(labels.select(col("id").as("label"), col("label").as("jump")),
           Seq("label"))
         .select(col("id"), col("jump").as("label"),
@@ -343,15 +334,14 @@ object Dedup {
     *
     * Output: (doc_id, cluster_id) for every doc in `labels` or touching a
     * new pair — the new label table to persist for tomorrow. */
-  def nearDupClustersIncremental(labels: DataFrame, newPairs: DataFrame,
-                                 materialize: Materializer =
-                                   Materializer.Local): DataFrame = {
-    val lab = materialize(labels.select(col("doc_id").as("l_id"),
+  def nearDupClustersIncremental(labels: DataFrame, newPairs: DataFrame)
+      : DataFrame = {
+    val lab = Materializer.Local(labels.select(col("doc_id").as("l_id"),
       col("cluster_id").as("l_cl")))
     // materialize the caller's pair plan BEFORE it fans out (contraction
     // + the two newDocs union arms would re-run the incremental band-join
     // + verify three times — the q84/pageRank double-reference lesson)
-    val np = materialize(newPairs.select(col("a_id"), col("b_id")))
+    val np = Materializer.Local(newPairs.select(col("a_id"), col("b_id")))
     // contract today's edges through yesterday's labels (self when absent)
     val contracted = np
       .join(lab.withColumnRenamed("l_id", "a_id")
@@ -364,8 +354,8 @@ object Dedup {
       .select(least(col("ra"), col("rb")).as("a_id"),
         greatest(col("ra"), col("rb")).as("b_id"))
     // CC over the contracted graph: rep -> merged-component min id
-    val merged = materialize(
-      nearDupClusters(contracted, materialize)
+    val merged = Materializer.Local(
+      nearDupClusters(contracted)
         .select(col("doc_id").as("rep"), col("cluster_id").as("new_cl")))
     // compose: old docs re-label through their (possibly merged) rep;
     // docs only in new pairs pick up their rep's merged label directly
@@ -404,11 +394,11 @@ object Dedup {
     * `pairs.sim` must already be rounded (the generators round(6)), so
     * `sim >= θ` compares identical IEEE values on every engine.
     * Returns (theta, n_pairs, n_docs, mean_sim) ordered by theta. */
-  def dedupThresholdSweep(pairs: DataFrame, thresholds: Seq[Double],
-                          materialize: Materializer = Materializer.Local)
+  def dedupThresholdSweep(pairs: DataFrame, thresholds: Seq[Double])
       : DataFrame = {
     require(thresholds.nonEmpty)
-    val p = materialize(pairs.select(col("a_id"), col("b_id"), col("sim")))
+    val p = Materializer.Local(
+      pairs.select(col("a_id"), col("b_id"), col("sim")))
     val sp = p.sparkSession
     import sp.implicits._
     val thr = thresholds.distinct.sorted.toDF("theta")
@@ -446,9 +436,8 @@ object Dedup {
     * must be deterministic per row (it is evaluated on both sides of the
     * self-join). */
   def keepBest(docs: DataFrame, pairs: DataFrame, idCol: String,
-               score: Column,
-               materialize: Materializer = Materializer.Local): DataFrame = {
-    val clusters = nearDupClusters(pairs, materialize)
+               score: Column): DataFrame = {
+    val clusters = nearDupClusters(pairs)
       .withColumnRenamed("doc_id", "kb_id")
     val labeled = docs
       .join(clusters, col(idCol) === col("kb_id"), "left")
@@ -486,15 +475,13 @@ object Dedup {
     * id-keyed left join attaches them, both splits are map-side
     * projections. */
   def clusterAwareSplit(docs: DataFrame, pairs: DataFrame, idCol: String,
-                        trainHexCutoff: String = "c",
-                        materialize: Materializer = Materializer.Local)
-      : DataFrame = {
+                        trainHexCutoff: String = "c"): DataFrame = {
     // the ONE md5-bucket split rule (shared with NaiveBayes/q63), so the
     // per-doc and per-cluster assignments can never drift apart
     def splitOf(c: Column): Column =
       when(NaiveBayes.isTrain(c, trainHexCutoff), lit("train"))
         .otherwise(lit("test"))
-    val clusters = nearDupClusters(pairs, materialize)
+    val clusters = nearDupClusters(pairs)
       .withColumnRenamed("doc_id", "cs_id")
     // project docs down to the id BEFORE the join: assignment needs
     // nothing else, the exchange carries one column, and a caller whose
@@ -547,9 +534,7 @@ object Dedup {
     * shape matches the MinHash path: map-side signatures, equi-join on
     * (block index, block value), exact verify on candidates only. */
   def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                          maxHamming: Int = 3,
-                          materialize: Materializer = Materializer.Local)
-      : DataFrame = {
+                          maxHamming: Int = 3): DataFrame = {
     // (id, 16-char sig) is referenced three times (banding + both sides of
     // the verify re-attach); materialize it once so the md5-per-token
     // signature pass runs once over the corpus, not three times — the
@@ -558,7 +543,7 @@ object Dedup {
     // FanOut before the projection: the md5-per-token signature is the
     // per-row cost, and a single-row-group input would otherwise run it
     // inside a one-task scan stage (no-op at production partitioning)
-    val sig = materialize(
+    val sig = Materializer.Local(
       FanOut(docs.select(col(idCol).as("id"), col(textCol).as("t_")))
         .select(col("id"), simhashHex(col("t_")).as("sig")))
     bandedHammingPairs(sig, maxHamming)
@@ -601,10 +586,8 @@ object Dedup {
     * the same banded-Hamming search as SimHash text dedup — decode and
     * hashing are map-side `mapPartitions` work, the pair search shuffles
     * 8-byte signatures + ids only. */
-  def imageNearDupPairs(hashes: DataFrame, maxHamming: Int = 3,
-                        materialize: Materializer = Materializer.Local)
-      : DataFrame = {
-    val sig = materialize(hashes.filter(col("decoded"))
+  def imageNearDupPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
+    val sig = Materializer.Local(hashes.filter(col("decoded"))
       .select(col("doc_id").as("id"), col("dhash").as("sig")))
     bandedHammingPairs(sig, maxHamming)
   }
@@ -615,10 +598,8 @@ object Dedup {
     * envelope fingerprints go through the shared banded-Hamming search.
     * Decode + hashing are map-side; the pair search shuffles 8-byte
     * signatures + ids only, never PCM. */
-  def audioNearDupPairs(hashes: DataFrame, maxHamming: Int = 3,
-                        materialize: Materializer = Materializer.Local)
-      : DataFrame = {
-    val sig = materialize(hashes.filter(col("decoded"))
+  def audioNearDupPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
+    val sig = Materializer.Local(hashes.filter(col("decoded"))
       .select(col("doc_id").as("id"), col("ahash").as("sig")))
     bandedHammingPairs(sig, maxHamming)
   }
@@ -629,10 +610,8 @@ object Dedup {
     * video key-frame dHash all ride the SAME banded-Hamming search.
     * Decode + hashing are map-side; the pair search shuffles 8-byte
     * signatures + ids only, never frames. */
-  def videoNearDupPairs(hashes: DataFrame, maxHamming: Int = 3,
-                        materialize: Materializer = Materializer.Local)
-      : DataFrame = {
-    val sig = materialize(hashes.filter(col("decoded"))
+  def videoNearDupPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
+    val sig = Materializer.Local(hashes.filter(col("decoded"))
       .select(col("doc_id").as("id"), col("vhash").as("sig")))
     bandedHammingPairs(sig, maxHamming)
   }
@@ -648,13 +627,11 @@ object Dedup {
     * ([[Materializer.Persisted]] — ~24 bytes/image), hash only each
     * day's new images, append confirmed pairs and the new index rows. */
   def bandedHammingPairsIncremental(newSig: DataFrame, sig: DataFrame,
-                                    maxHamming: Int = 3,
-                                    materialize: Materializer =
-                                      Materializer.Local): DataFrame = {
+                                    maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3,
       "4-block banding guarantees recall only for maxHamming <= 3")
-    val fresh = materialize(newSig)
-    val all = materialize(fresh.unionByName(sig))
+    val fresh = Materializer.Local(newSig)
+    val all = Materializer.Local(fresh.unionByName(sig))
     def banded(df: DataFrame): DataFrame = df.select(col("id"),
       explode_outer(transform(sequence(lit(0), lit(3)),
         b => concat_ws("_", b.cast("string"),
@@ -811,9 +788,7 @@ object Dedup {
     * candidates only via two id-keyed joins. */
   def prefixFilterJaccardPairs(docs: DataFrame, idCol: String,
                                textCol: String, shingleN: Int,
-                               thetaNum: Int, thetaDen: Int,
-                               mat: Materializer = Materializer.Local)
-      : DataFrame = {
+                               thetaNum: Int, thetaDen: Int): DataFrame = {
     require(thetaNum > 0 && thetaDen >= thetaNum)
     // r14 REVERT of the r13 shingling fan-out: the sf1 filtered A/B the
     // r13 verdict asked for shows NO win there (fan-out ON
@@ -821,7 +796,7 @@ object Dedup {
     // min-of-2 at .bench/sf1) while r13's own sf0.1 numbers carried a
     // small cost (q209 3.85 -> 4.54) — the shingling kernel is cheap
     // enough per row that the exchange never pays for itself.
-    val sets = mat(
+    val sets = Materializer.Local(
       (docs.select(col(idCol).as("id"), col(textCol).as("t_")))
         .select(col("id"),
           array_distinct(TextAnalysis.shingles(col("t_"), shingleN))
@@ -985,9 +960,7 @@ object Dedup {
     * on the verify stage at sf0.1, output bit-identical). */
   def weightedMinhashPairs(docs: DataFrame, idCol: String, textCol: String,
                            k: Int = 8, bands: Int = 4,
-                           thetaNum: Int = 2, thetaDen: Int = 5,
-                           mat: Materializer = Materializer.Local)
-      : DataFrame = {
+                           thetaNum: Int = 2, thetaDen: Int = 5): DataFrame = {
     require(k % bands == 0 && thetaNum >= 0 && thetaDen > 0)
     val rpb = k / bands
     // FanOut before tokenize+explode: the map side of the tf exchange is
@@ -999,7 +972,7 @@ object Dedup {
     // model algebra, the |tf|*k argmin partials, the tfMaps build —
     // inherited that near-serial partitioning (the q304 signature stage
     // ran ~5 s on ONE task). At production width both guards no-op.
-    val tf = FanOut(mat(FanOut(docs.select(col(idCol).as("id"),
+    val tf = FanOut(Materializer.Local(FanOut(docs.select(col(idCol).as("id"),
         col(textCol).as("t_")))
       .select(col("id"), explode(TextAnalysis.tokens(col("t_"))).as("t"))
       .groupBy(col("id"), col("t")).agg(count(lit(1)).as("w"))))
@@ -1027,7 +1000,7 @@ object Dedup {
     // 3.4M candidates on 1-2 cores). The FanOut guard makes this a
     // structural no-op once the candidate set is genuinely wide
     // (production partitioning).
-    val cands = FanOut(mat(
+    val cands = FanOut(Materializer.Local(
       keyed.select(col("id").as("a_id"), col("bk"))
         .join(keyed.select(col("id").as("b_id"), col("bk")), Seq("bk"))
         .filter(col("a_id") < col("b_id"))
@@ -1040,7 +1013,7 @@ object Dedup {
     // unique per id, so struct (t, w) order is strict; the sort is per
     // bounded per-doc entry list, and an unsorted input merely falls
     // back to map_min_sum's order-agnostic quadratic path
-    val tfMaps = mat(tf.groupBy(col("id"))
+    val tfMaps = Materializer.Local(tf.groupBy(col("id"))
       .agg(map_from_entries(
           sort_array(collect_list(struct(col("t"), col("w")))))
         .as("m"),

@@ -32,15 +32,13 @@ import org.apache.spark.sql.functions._
 object EditJoin {
 
   def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
-                        maxDist: Int = 1,
-                        materialize: Materializer = Materializer.Local)
-      : DataFrame = {
+                        maxDist: Int = 1): DataFrame = {
     require(maxDist >= 1 && maxDist <= 4,
       "segment blocking is practical for maxDist in [1, 4]")
     val K = maxDist
     // (id, str, len) pinned once: segments, probes, and both verify
     // re-attach sides all read it
-    val s = materialize(df
+    val s = Materializer.Local(df
       .select(col(idCol).as("id"), col(strCol).as("str"),
         length(col(strCol)).as("l"))
       .filter(col("l") >= 1))

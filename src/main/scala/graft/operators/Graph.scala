@@ -32,8 +32,7 @@ object Graph {
     * deterministic, replayable result, not a convergence race. */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
                broadcastRanks: Boolean = false,
-               distinctEdges: Boolean = true,
-               materialize: Materializer = Materializer.Local): DataFrame = {
+               distinctEdges: Boolean = true): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1)
     // distinctEdges=false skips the dedup shuffle when the caller's edge
     // set is distinct by construction (a duplicated edge double-counts
@@ -42,19 +41,19 @@ object Graph {
     // materialize the edge set BEFORE it fans out to degree + join: both
     // consumers would otherwise re-run the caller's (possibly expensive)
     // edge-building plan — the q84 double-reference lesson
-    val e = materialize(if (distinctEdges) e0.distinct() else e0)
+    val e = Materializer.Local(if (distinctEdges) e0.distinct() else e0)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
     // degree is loop-invariant: attach it to the edge set ONCE, so each
     // iteration pays one equi-join instead of two (at 100 TB the edge
     // table is the big operand — halving its joins halves the loop's
     // shuffle volume)
-    val ed = materialize(e.join(deg, Seq("src")))
+    val ed = Materializer.Local(e.join(deg, Seq("src")))
     // every node has outdegree >= 1, so `deg` IS the node table.
     // The node table is LOOP-INVARIANT: materialized once, it serves as
     // every round's left-join base, so `ranks` is referenced exactly
     // ONCE per round (in the contribution join) — which is what makes
     // the checkpoint cadence below safe (r14)
-    val nodes = materialize(
+    val nodes = Materializer.Local(
       ed.select(col("src").as("node")).distinct())
     var ranks = nodes.withColumn("r", lit(1.0))
     // broadcastRanks: when the node set is dimension-scale (an entity
@@ -83,7 +82,7 @@ object Graph {
       // (ranks has a single consumer per round), so the per-round job
       // count halves at unchanged total compute — the sf0.1 floor was
       // scheduling, not data (r14, measured)
-      ranks = if (i % 2 == 0 || i == iters) materialize(next) else next
+      ranks = if (i % 2 == 0 || i == iters) Materializer.Local(next) else next
     }
     ranks.select(col("node"), col("r").as("rank"))
   }
@@ -107,22 +106,20 @@ object Graph {
     *
     * Input: any (src, dst) edge list; self-loops dropped, duplicate /
     * reversed edges collapsed. */
-  def triangleStats(edges: DataFrame,
-                    materialize: Materializer = Materializer.Local)
-      : DataFrame = {
-    val e = materialize(edges
+  def triangleStats(edges: DataFrame): DataFrame = {
+    val e = Materializer.Local(edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct())
-    val deg = materialize(
+    val deg = Materializer.Local(
       e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("d")))
     // orient low-(degree, id) -> high-(degree, id); struct compare gives
     // the lexicographic (d, n) total order
     val du = deg.select(col("n").as("u"), struct(col("d"), col("n")).as("ku"))
     val dv = deg.select(col("n").as("v"), struct(col("d"), col("n")).as("kv"))
-    val oriented = materialize(e.join(du, Seq("u")).join(dv, Seq("v"))
+    val oriented = Materializer.Local(e.join(du, Seq("u")).join(dv, Seq("v"))
       .select(
         when(col("ku") < col("kv"), col("u")).otherwise(col("v")).as("a"),
         when(col("ku") < col("kv"), col("v")).otherwise(col("u")).as("b"),
@@ -160,10 +157,9 @@ object Graph {
     * (degeneracy ordering peels in O(span) rounds; each round is one
     * degree aggregate + two keyed semi-joins, edge-set-only shuffles,
     * lineage cut per round via [[Materializer]]). */
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-            materialize: Materializer = Materializer.Local): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    var e = materialize(edges
+    var e = Materializer.Local(edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
@@ -174,7 +170,7 @@ object Graph {
         .unionAll(e.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select(col("n"))
-      e = materialize(
+      e = Materializer.Local(
         e.join(keep.withColumnRenamed("n", "u"), Seq("u"))
           .join(keep.withColumnRenamed("n", "v"), Seq("v"))
           .select(col("u"), col("v")))
@@ -201,17 +197,16 @@ object Graph {
     * distinct neighbor labels, never corpus-wide), one left join back.
     * Edge set symmetrized + deduped once up front; lineage cut per
     * round. Returns (node, label) for nodes labeled after `rounds`. */
-  def labelPropagation(edges: DataFrame, seeds: DataFrame, rounds: Int,
-                       materialize: Materializer = Materializer.Local)
+  def labelPropagation(edges: DataFrame, seeds: DataFrame, rounds: Int)
       : DataFrame = {
     require(rounds >= 1)
     import org.apache.spark.sql.expressions.Window
     val e0 = edges.select(col("src"), col("dst"))
-    val sym = materialize(
+    val sym = Materializer.Local(
       e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst")).distinct())
     val nodes = sym.select(col("src").as("node")).distinct()
-    var lab = materialize(nodes
+    var lab = Materializer.Local(nodes
       .join(seeds.select(col("node"), col("label").as("seed")),
         Seq("node"), "left")
       .select(col("node"), col("seed"), col("seed").as("lab")))
@@ -227,7 +222,7 @@ object Graph {
             .orderBy(col("c").desc, col("lab").asc)))
         .filter(col("rk") === 1)
         .select(col("node"), col("lab").as("wlab"))
-      lab = materialize(lab.join(win, Seq("node"), "left")
+      lab = Materializer.Local(lab.join(win, Seq("node"), "left")
         .select(col("node"), col("seed"),
           when(col("seed").isNotNull, col("seed"))
             .otherwise(coalesce(col("wlab"), col("lab"))).as("lab")))
@@ -257,11 +252,9 @@ object Graph {
     * round(6); ln is one IEEE op order. Existing edges leave via one
     * anti-join; topN rides TakeOrdered (score desc, u, v) — no global
     * sort. */
-  def adamicAdar(edges: DataFrame, maxDegree: Int, topN: Int,
-                 materialize: Materializer = Materializer.Local)
-      : DataFrame = {
+  def adamicAdar(edges: DataFrame, maxDegree: Int, topN: Int): DataFrame = {
     require(maxDegree >= 2 && topN >= 1)
-    val e = materialize(edges
+    val e = Materializer.Local(edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
@@ -270,7 +263,7 @@ object Graph {
       .unionAll(e.select(col("v").as("w"), col("u").as("nb")))
     val deg = adj.groupBy(col("w")).agg(count(lit(1)).as("d"))
     // a center needs >= 2 neighbors to form a wedge, so ln(d) > 0
-    val centers = materialize(adj
+    val centers = Materializer.Local(adj
       .join(deg.filter(col("d") <= maxDegree && col("d") >= 2),
         Seq("w"))
       .select(col("w"), col("nb"),
@@ -299,16 +292,14 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iters: Int, damping: Double = 0.85,
                            broadcastRanks: Boolean = false,
-                           distinctEdges: Boolean = true,
-                           materialize: Materializer = Materializer.Local)
-      : DataFrame = {
+                           distinctEdges: Boolean = true): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1)
     val e0 = edges.select(col("src"), col("dst"))
-    val e = materialize(if (distinctEdges) e0.distinct() else e0)
+    val e = Materializer.Local(if (distinctEdges) e0.distinct() else e0)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val ed = materialize(e.join(deg, Seq("src")))
+    val ed = Materializer.Local(e.join(deg, Seq("src")))
     // node table with the seed indicator attached once (loop-invariant)
-    val nodes = materialize(ed.select(col("src").as("node")).distinct()
+    val nodes = Materializer.Local(ed.select(col("src").as("node")).distinct()
       .join(seeds.select(col("node")).distinct()
         .withColumn("s", lit(1)), Seq("node"), "left")
       .select(col("node"), coalesce(col("s"), lit(0)).as("seed")))
@@ -336,7 +327,7 @@ object Graph {
       i += 1
       // same checkpoint cadence as [[pageRank]] (ranks has one consumer
       // per round — `nodes` is the loop-invariant join base)
-      ranks = if (i % 2 == 0 || i == iters) materialize(next) else next
+      ranks = if (i % 2 == 0 || i == iters) Materializer.Local(next) else next
     }
     ranks.select(col("node"), col("r").as("rank"))
   }
@@ -358,14 +349,13 @@ object Graph {
     * oracle-replayable; with min-combine the re-derived closer labels
     * collapse for free. */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-              broadcastDist: Boolean = false,
-              materialize: Materializer = Materializer.Local): DataFrame = {
+              broadcastDist: Boolean = false): DataFrame = {
     require(maxHops >= 1)
     val e0 = edges.select(col("src"), col("dst"))
-    val sym = materialize(
+    val sym = Materializer.Local(
       e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst")).distinct())
-    var dist = materialize(seeds.select(col("node")).distinct()
+    var dist = Materializer.Local(seeds.select(col("node")).distinct()
       .withColumn("hops", lit(0)))
     // entity graphs: broadcast the (node, hops) table so the edge set
     // never shuffles in the expansion join — identical values
@@ -375,7 +365,7 @@ object Graph {
       val frontier = sym
         .join(distSide(dist.withColumnRenamed("node", "src")), Seq("src"))
         .select(col("dst").as("node"), (col("hops") + lit(1)).as("hops"))
-      dist = materialize(dist.unionAll(frontier)
+      dist = Materializer.Local(dist.unionAll(frontier)
         .groupBy(col("node")).agg(min(col("hops")).as("hops")))
       i += 1
     }
@@ -413,18 +403,16 @@ object Graph {
     * estimates are engine-specific, so the hash-checked columns are the
     * exact counts + a boolean pinning the estimate within
     * 3·rsd(lgK)). Returns (node, n1, n2, within_tol). */
-  def neighborhoodFunction(edges: DataFrame, lgK: Int = 12,
-                           materialize: Materializer = Materializer.Local)
-      : DataFrame = {
+  def neighborhoodFunction(edges: DataFrame, lgK: Int = 12): DataFrame = {
     val e0 = edges.select(col("src"), col("dst"))
-    val sym = materialize(
+    val sym = Materializer.Local(
       e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst")).distinct())
-    val m1 = materialize(
+    val m1 = Materializer.Local(
       sym.select(col("src").as("node"), col("dst").as("member"))
         .unionAll(sym.select(col("src").as("node"),
           col("src").as("member")).distinct()))
-    val ball1 = materialize(m1.groupBy(col("node"))
+    val ball1 = Materializer.Local(m1.groupBy(col("node"))
       .agg(count(lit(1)).as("n1"),
         hll_sketch_agg(col("member"), lgK).as("sk1")))
     val contrib = sym.select(col("src").as("node"), col("dst").as("nb"))
@@ -452,17 +440,16 @@ object Graph {
   }
 
   def weightedShortestPaths(edges: DataFrame, seeds: DataFrame,
-                            rounds: Int, broadcastDist: Boolean = false,
-                            materialize: Materializer = Materializer.Local)
+                            rounds: Int, broadcastDist: Boolean = false)
       : DataFrame = {
     require(rounds >= 1)
     val e0 = edges.select(col("src"), col("dst"), col("cost").cast("long"))
-    val sym = materialize(
+    val sym = Materializer.Local(
       e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst"),
           col("cost")))
         .filter(col("src") =!= col("dst"))
         .groupBy(col("src"), col("dst")).agg(min(col("cost")).as("cost")))
-    var dist = materialize(seeds.select(col("node")).distinct()
+    var dist = Materializer.Local(seeds.select(col("node")).distinct()
       .withColumn("cost", lit(0L)))
     def distSide(df: DataFrame) = if (broadcastDist) broadcast(df) else df
     var i = 0
@@ -471,7 +458,7 @@ object Graph {
         .join(distSide(dist.select(col("node").as("src"),
           col("cost").as("dc"))), Seq("src"))
         .select(col("dst").as("node"), (col("dc") + col("cost")).as("cost"))
-      dist = materialize(dist.unionAll(frontier)
+      dist = Materializer.Local(dist.unionAll(frontier)
         .groupBy(col("node")).agg(min(col("cost")).as("cost")))
       i += 1
     }
@@ -596,11 +583,10 @@ object Graph {
     * shuffles. Returns (node, score, role∈{hub,authority}); every src
     * gets a hub score, every dst an authority score. */
   def hits(edges: DataFrame, iters: Int,
-           broadcastRanks: Boolean = true,
-           mat: Materializer = Materializer.Local): DataFrame = {
+           broadcastRanks: Boolean = true): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
     def side(df: DataFrame) = if (broadcastRanks) broadcast(df) else df
-    val e = mat(edges.select(col("src"), col("dst")))
+    val e = Materializer.Local(edges.select(col("src"), col("dst")))
     var hubs = e.select(col("src").as("node")).distinct()
       .withColumn("h", lit(1.0))
     var auths: DataFrame = null
@@ -610,17 +596,19 @@ object Graph {
       // checkpoint the lazy plan doubles per half-step — 2^(2·iters)
       // re-executions of the whole chain (measured: q248 at 87 s for a
       // sub-second workload before this cut)
-      val araw = mat(e.join(side(hubs), col("src") === col("node"))
-        .groupBy(col("dst"))
-        .agg(sum(col("h").cast("decimal(38,20)")).as("c")))
+      val araw = Materializer.Local(
+        e.join(side(hubs), col("src") === col("node"))
+          .groupBy(col("dst"))
+          .agg(sum(col("h").cast("decimal(38,20)")).as("c")))
       val an = araw.agg(sum(col("c")).as("s"))
       auths = araw.crossJoin(broadcast(an))
         .select(col("dst").as("node"),
           round(col("c").cast("double") / col("s").cast("double"), 12)
             .as("a"))
-      val hraw = mat(e.join(side(auths), col("dst") === col("node"))
-        .groupBy(col("src"))
-        .agg(sum(col("a").cast("decimal(38,20)")).as("c")))
+      val hraw = Materializer.Local(
+        e.join(side(auths), col("dst") === col("node"))
+          .groupBy(col("src"))
+          .agg(sum(col("a").cast("decimal(38,20)")).as("c")))
       val hn = hraw.agg(sum(col("c")).as("s"))
       hubs = hraw.crossJoin(broadcast(hn))
         .select(col("src").as("node"),
@@ -655,28 +643,26 @@ object Graph {
     * state-keyed (never all-pairs); state is (k · reachable-nodes)
     * rows; lineage cut per layer via the [[Materializer]]. */
   def betweennessSampled(edges: DataFrame, seeds: DataFrame,
-                         maxDepth: Int,
-                         materialize: Materializer = Materializer.Local)
-      : DataFrame = {
+                         maxDepth: Int): DataFrame = {
     require(maxDepth >= 1)
     val e0 = edges.select(col("src"), col("dst"))
-    val sym = materialize(
+    val sym = Materializer.Local(
       e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst")).distinct())
-    var level = materialize(seeds.select(col("node")).distinct()
+    var level = Materializer.Local(seeds.select(col("node")).distinct()
       .select(col("node").as("seed"), col("node"),
         lit(0).as("hops"), lit(1L).as("sigma")))
     var visited = level
     val layers = scala.collection.mutable.ArrayBuffer(level)
     for (h <- 1 to maxDepth) {
-      val next = materialize(level
+      val next = Materializer.Local(level
         .join(sym.withColumnRenamed("src", "node"), Seq("node"))
         .groupBy(col("seed"), col("dst").as("node"))
         .agg(sum(col("sigma")).as("sigma"))
         .join(visited.select(col("seed"), col("node")),
           Seq("seed", "node"), "left_anti")
         .withColumn("hops", lit(h)))
-      visited = materialize(visited.select(col("seed"), col("node"))
+      visited = Materializer.Local(visited.select(col("seed"), col("node"))
         .unionByName(next.select(col("seed"), col("node"))))
       layers += next
       level = next
@@ -685,7 +671,7 @@ object Graph {
     // layer sums the pinned per-successor contributions
     def pin(c: org.apache.spark.sql.Column) =
       round(c, 9).cast("decimal(29,9)")
-    var delta = materialize(layers(maxDepth)
+    var delta = Materializer.Local(layers(maxDepth)
       .select(col("seed"), col("node"), col("sigma"),
         lit(0.0).as("d")))
     var acc = delta
@@ -694,7 +680,7 @@ object Graph {
         .join(sym.withColumnRenamed("src", "node"), Seq("node"))
         .select(col("seed"), col("dst").as("node"),
           col("sigma").as("sw"), col("d").as("dw"))
-      val cur = materialize(layers(h)
+      val cur = Materializer.Local(layers(h)
         .join(contrib, Seq("seed", "node"), "left")
         .groupBy(col("seed"), col("node"), col("sigma"))
         .agg(sum(pin(col("sigma").cast("double")
@@ -703,7 +689,7 @@ object Graph {
         .select(col("seed"), col("node"), col("sigma"),
           round(coalesce(col("dsum").cast("double"), lit(0.0)), 9)
             .as("d")))
-      acc = materialize(acc.unionByName(cur))
+      acc = Materializer.Local(acc.unionByName(cur))
       delta = cur
     }
     acc.filter(col("seed") =!= col("node"))

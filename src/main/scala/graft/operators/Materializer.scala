@@ -2,62 +2,32 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** How the iterative / multiply-referenced dedup operators pin an
-  * intermediate (the minhash/simhash index, per-round component labels) so
-  * it is computed once and lineage stays flat across rounds.
+/** How operators and query bodies pin an intermediate (the minhash/simhash
+  * index, per-round component labels, a count table that feeds both a
+  * driver action and the output) so it is computed once and lineage stays
+  * flat across rounds.
   *
-  * Executor-loss contract of each mode:
-  *   - [[Materializer.Local]] (default): eager `localCheckpoint` — blocks
-  *     live in executor storage. Fastest (no DFS round-trip), but a
-  *     lost or preempted executor makes the job unrecoverable
-  *     mid-iteration. The right default for `local[n]` and short-lived
-  *     jobs on stable clusters.
-  *   - [[Materializer.Reliable]]: eager RDD `checkpoint` to the
-  *     SparkContext checkpoint directory — recomputable-free recovery on
-  *     executor loss; requires `SparkContext.setCheckpointDir` to point at
-  *     fault-tolerant storage. The production choice for long dedup runs
-  *     on preemptible fleets.
+  *   - [[Materializer.Local]]: eager `localCheckpoint` — blocks live in
+  *     executor storage. No DFS round-trip, but a lost or preempted
+  *     executor makes the job unrecoverable mid-iteration. Every operator
+  *     pins this way; none takes a materializer as a parameter.
   *   - [[Materializer.Persisted]]: write parquet and re-read — the index
   *     becomes a durable, reusable artifact (survives executor AND driver
   *     loss, shareable across runs). At 100 TB the minhash/simhash index
   *     is exactly the thing a pipeline persists once and joins against for
-  *     every later incremental dedup, so this mode doubles as the
-  *     index-export path.
+  *     every later incremental dedup, so this is the index-export path.
   */
-sealed trait Materializer {
-  def apply(df: DataFrame): DataFrame
-}
-
 object Materializer {
 
   /** Eager executor-memory materialization (`localCheckpoint(true)`). */
-  case object Local extends Materializer {
-    override def apply(df: DataFrame): DataFrame = df.localCheckpoint(true)
+  object Local {
+    def apply(df: DataFrame): DataFrame = df.localCheckpoint(true)
   }
 
-  /** No-op: leave the intermediate as a lazy plan. For callers composing
-    * their own caching — and for plan audits, where a checkpoint would
-    * hide the subplan under scrutiny from the executed plan. Multiply-
-    * referenced intermediates RE-EXECUTE per reference in this mode. */
-  case object Passthrough extends Materializer {
-    override def apply(df: DataFrame): DataFrame = df
-  }
-
-  /** Eager reliable checkpoint to `SparkContext.setCheckpointDir`. */
-  case object Reliable extends Materializer {
-    override def apply(df: DataFrame): DataFrame = {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "Materializer.Reliable needs SparkContext.setCheckpointDir")
-      df.checkpoint(eager = true)
-    }
-  }
-
-  /** Write-parquet-and-reread under `dir` (one subdirectory per pinned
-    * intermediate, stable within an operator call). */
-  final case class Persisted(dir: String) extends Materializer {
-    private val seq = new java.util.concurrent.atomic.AtomicInteger(0)
-    override def apply(df: DataFrame): DataFrame = {
-      val path = s"$dir/mat_${seq.getAndIncrement()}"
+  /** Write `df` as parquet to `<dir>/mat_0` and read it back. */
+  object Persisted {
+    def apply(dir: String)(df: DataFrame): DataFrame = {
+      val path = s"$dir/mat_0"
       df.write.mode("overwrite").parquet(path)
       df.sparkSession.read.parquet(path)
     }

@@ -66,7 +66,7 @@ object Overlap {
     * there (side A and side B), and without the pin the whole corpus scan
     * + sketch aggregation would re-execute per side. */
   def sliceOverlap(docs: DataFrame, sliceCol: String, textCol: String,
-                   shingleN: Int, k: Int,
-                   mat: Materializer = Materializer.Local): DataFrame =
-    kmvJaccard(mat(kmvSketch(docs, sliceCol, textCol, shingleN, k)), k)
+                   shingleN: Int, k: Int): DataFrame =
+    kmvJaccard(
+      Materializer.Local(kmvSketch(docs, sliceCol, textCol, shingleN, k)), k)
 }

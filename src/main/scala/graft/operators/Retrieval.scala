@@ -26,10 +26,9 @@ object Retrieval {
     * frame (r14, §2.4 fewer passes) — each batch ranker builds exactly
     * this when not handed one. */
   def trimmedPostings(docs: DataFrame, idCol: String, textCol: String,
-                      allTerms: Seq[String],
-                      mat: Materializer = Materializer.Local): DataFrame = {
+                      allTerms: Seq[String]): DataFrame = {
     val toks = TextAnalysis.tokens(col(textCol))
-    mat(docs.select(col(idCol).as("doc_id"),
+    Materializer.Local(docs.select(col(idCol).as("doc_id"),
       size(toks).as("dl"),
       explode_outer(filter(toks, t => t.isInCollection(allTerms)))
         .as("t")))
@@ -54,13 +53,12 @@ object Retrieval {
     * final top-N is a bounded TakeOrdered, not a window. */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
            queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-           topN: Int = 10,
-           mat: Materializer = Materializer.Local): DataFrame = {
+           topN: Int = 10): DataFrame = {
     require(queryTerms.nonEmpty && topN > 0)
     val toks = TextAnalysis.tokens(col(textCol))
     // one corpus pass: doc length for every doc (zero-token docs count
     // toward N and avgdl, exactly as the oracle's array_length does)
-    val dl = mat(docs.select(col(idCol).as("doc_id"),
+    val dl = Materializer.Local(docs.select(col(idCol).as("doc_id"),
       size(toks).as("dl"),
       explode_outer(filter(toks, t => t.isInCollection(queryTerms)))
         .as("t")))
@@ -105,7 +103,6 @@ object Retrieval {
   def bm25Batch(docs: DataFrame, idCol: String, textCol: String,
                 queries: Seq[(String, Seq[String])], k1: Double = 1.2,
                 b: Double = 0.75, topN: Int = 10,
-                mat: Materializer = Materializer.Local,
                 postings: Option[DataFrame] = None): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty) && topN > 0)
     val allTerms = queries.flatMap(_._2).distinct
@@ -113,7 +110,7 @@ object Retrieval {
     // docs and the union of these queries' terms — the caller-shared
     // one-tokenize path
     val dl = postings.getOrElse(
-      trimmedPostings(docs, idCol, textCol, allTerms, mat))
+      trimmedPostings(docs, idCol, textCol, allTerms))
     val stats = dl.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).cast("double").as("n_docs"),
         (sum(col("dl")).cast("double") / count(lit(1)).cast("double"))
@@ -160,7 +157,6 @@ object Retrieval {
                            textCol: String,
                            queries: Seq[(String, Seq[String])],
                            mu: Double = 100.0, topN: Int = 20,
-                           mat: Materializer = Materializer.Local,
                            postings: Option[DataFrame] = None)
       : DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty) &&
@@ -168,7 +164,7 @@ object Retrieval {
     val allTerms = queries.flatMap(_._2).distinct
     // caller-shared one-tokenize path — see [[bm25Batch]]
     val dl = postings.getOrElse(
-      trimmedPostings(docs, idCol, textCol, allTerms, mat))
+      trimmedPostings(docs, idCol, textCol, allTerms))
     val docLen = dl.groupBy(col("doc_id"))
       .agg(first(col("dl")).as("dl"))
     val totT = docLen.agg(sum(col("dl")).cast("long").as("tt"))
@@ -176,7 +172,7 @@ object Retrieval {
       .agg(count(lit(1)).cast("long").as("cf"))
     val pw = round(col("cf").cast("double") / col("tt").cast("double"),
       12)
-    val cfp = mat(cf.crossJoin(broadcast(totT))
+    val cfp = Materializer.Local(cf.crossJoin(broadcast(totT))
       .select(col("t"), pw.as("pw")))
     val sp0 = docs.sparkSession
     import sp0.implicits._
@@ -245,12 +241,10 @@ object Retrieval {
     * one pinned final op order. */
   def queryLikelihood(docs: DataFrame, idCol: String, textCol: String,
                       queryTerms: Seq[String], mu: Double = 100.0,
-                      topN: Int = 20,
-                      mat: Materializer = Materializer.Local)
-      : DataFrame = {
+                      topN: Int = 20): DataFrame = {
     require(queryTerms.nonEmpty && topN > 0 && mu > 0)
     val toks = TextAnalysis.tokens(col(textCol))
-    val dl = mat(docs.select(col(idCol).as("doc_id"),
+    val dl = Materializer.Local(docs.select(col(idCol).as("doc_id"),
       size(toks).as("dl"),
       explode_outer(filter(toks, t => t.isInCollection(queryTerms)))
         .as("t")))
@@ -265,7 +259,7 @@ object Retrieval {
       .agg(count(lit(1)).cast("long").as("cf"))
     val pw = round(col("cf").cast("double") / col("tt").cast("double"),
       12)
-    val cfp = mat(cf.crossJoin(broadcast(totT))
+    val cfp = Materializer.Local(cf.crossJoin(broadcast(totT))
       .select(col("t"), pw.as("pw")))
     val cScalar = cfp.agg(
       sum(round(log(lit(mu) * col("pw")), 9).cast("decimal(38,9)"))
@@ -322,14 +316,14 @@ object Retrieval {
     * round(6). Returns (a_id, b_id, n_shared, sim) for pairs with
     * sim >= threshold, a_id < b_id. */
   def sparseCosinePairs(docs: DataFrame, idCol: String, textCol: String,
-                        maxDf: Long, threshold: Double, shingleN: Int = 1,
-                        mat: Materializer = Materializer.Local): DataFrame = {
+                        maxDf: Long, threshold: Double, shingleN: Int = 1)
+      : DataFrame = {
     val terms =
       if (shingleN <= 1) TextAnalysis.tokens(col(textCol))
       else TextAnalysis.shingles(col(textCol), shingleN)
     // (doc, term, tf) — one partial-combined exchange; pinned: the norm
     // aggregate, df filter, and both join sides all read it
-    val tf = mat(docs
+    val tf = Materializer.Local(docs
       .select(col(idCol).as("doc_id"), explode_outer(terms).as("t"))
       .filter(col("t").isNotNull)
       .groupBy(col("doc_id"), col("t"))
@@ -348,7 +342,7 @@ object Retrieval {
     val norms = kept.groupBy(col("doc_id"))
       .agg(sqrt(sum((col("tf") * col("tf")).cast("decimal(38,20)"))
         .cast("double")).as("nrm"))
-    val w = mat(kept.join(norms, Seq("doc_id"))
+    val w = Materializer.Local(kept.join(norms, Seq("doc_id"))
       .select(col("t"), col("doc_id"), (col("tf") / col("nrm")).as("w")))
     w.select(col("t"), col("doc_id").as("a_id"), col("w").as("a_w"))
       .join(w.select(col("t"), col("doc_id").as("b_id"), col("w").as("b_w")),
@@ -450,9 +444,9 @@ object Retrieval {
     * exact integer ratio (n_shared / |A|), so there is no float algebra
     * to replicate at all. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       shingleN: Int, maxDf: Long, threshold: Double,
-                       mat: Materializer = Materializer.Local): DataFrame = {
-    val sh = mat(docs
+                       shingleN: Int, maxDf: Long, threshold: Double)
+      : DataFrame = {
+    val sh = Materializer.Local(docs
       .select(col(idCol).as("doc_id"),
         explode(array_distinct(
           TextAnalysis.shingles(col(textCol), shingleN))).as("t")))
@@ -511,12 +505,9 @@ object Retrieval {
     * count pass explodes ONLY the feedback docs. */
   def rm3ExpandTerms(docs: DataFrame, idCol: String, textCol: String,
                      baseQuery: Seq[String], fbDocs: Int = 5,
-                     fbTerms: Int = 3,
-                     mat: Materializer = Materializer.Local)
-      : Seq[String] = {
+                     fbTerms: Int = 3): Seq[String] = {
     require(fbDocs > 0 && fbTerms > 0)
-    val run1 = bm25(docs, idCol, textCol, baseQuery, topN = fbDocs,
-      mat = mat)
+    val run1 = bm25(docs, idCol, textCol, baseQuery, topN = fbDocs)
     val ids = run1.select(col("doc_id")).collect().map(_.getLong(0)).toSeq
     val exp = docs.filter(col(idCol).isInCollection(ids))
       .select(explode(TextAnalysis.tokens(col(textCol))).as("t"))

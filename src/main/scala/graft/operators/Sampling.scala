@@ -39,9 +39,7 @@ object Sampling {
     * ) is re-ranked over its full population, so the result is exactly the
     * true top-n by construction, not with high probability. */
   def stratifiedSample(df: DataFrame, groupCol: String, idCol: String,
-                       n: Int, margin: Double = 4.0,
-                       materialize: Materializer = Materializer.Local)
-      : DataFrame = {
+                       n: Int, margin: Double = 4.0): DataFrame = {
     require(n > 0 && margin >= 1.0)
     val h = hashKey(idCol)
     val counts = df.groupBy(col(groupCol))
@@ -58,7 +56,7 @@ object Sampling {
     // materialized: the candidate set (~margin·n rows per group) feeds
     // both the sufficiency recount ACTION and the pool — unmaterialized,
     // the corpus scan behind it runs twice
-    val cands = materialize(
+    val cands = Materializer.Local(
       df.join(broadcast(thr.withColumnRenamed(groupCol, "s_grp")),
           col(groupCol) <=> col("s_grp"))
         .filter(h <= col("thr"))
@@ -113,10 +111,9 @@ object Sampling {
     * `target` must be a subset of `df` rows (same id space). Returns
     * (rk, id, logw, score) for the selected docs. */
   def dsirResample(df: DataFrame, target: DataFrame, idCol: String,
-                   textCol: String, n: Int, alpha: Double = 0.5,
-                   mat: Materializer = Materializer.Local): DataFrame = {
+                   textCol: String, n: Int, alpha: Double = 0.5): DataFrame = {
     require(n > 0)
-    val tf = mat(df
+    val tf = Materializer.Local(df
       .select(col(idCol).as("id"),
         explode(TextAnalysis.tokens(col(textCol))).as("t"))
       .groupBy(col("id"), col("t")).agg(count(lit(1)).as("tf")))
@@ -395,8 +392,8 @@ object Sampling {
     * nBuckets totals. No single-partition window, no global sort.
     * Returns per-doc (id, w, s, selected). */
   def budgetSelect(docs: DataFrame, idCol: String, weight: Column,
-                   score: Column, budget: Long, nBuckets: Int = 64,
-                   mat: Materializer = Materializer.Local): DataFrame = {
+                   score: Column, budget: Long, nBuckets: Int = 64)
+      : DataFrame = {
     require(budget >= 0 && nBuckets > 0)
     // materialize the narrow (id, w, s) table ONCE: it feeds three
     // consumers (quantile bounds, bucket totals, the final window), and
@@ -404,7 +401,7 @@ object Sampling {
     // score expression per boundary element after projection collapse
     // (the q98 trap — measured 20.6 s -> ~1 s at sf0.1 for a regex-heavy
     // quality score)
-    val base = mat(docs.select(col(idCol).cast("long").as("id"),
+    val base = Materializer.Local(docs.select(col(idCol).cast("long").as("id"),
       weight.cast("long").as("w"), score.cast("double").as("s"))
       .withColumn("k1", -col("s")))
     val probs = (1 until nBuckets).map(_.toDouble / nBuckets)

@@ -458,8 +458,8 @@ object Similarity {
 
   def pqTopK(corpus: DataFrame, queries: DataFrame,
              codebooks: Array[Array[Array[Float]]], k: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding",
-             mat: Materializer = Materializer.Local): DataFrame = {
+             idCol: String = "vec_id", vecCol: String = "embedding")
+      : DataFrame = {
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "empty PQ codebook")
     // The encoded corpus is the PQ INDEX — m longs per vector — and it
@@ -469,7 +469,7 @@ object Similarity {
     // PAIR (measured 10× the whole query at sf0.1). Pinning also matches
     // the operating mode: a pipeline encodes once, persists the index
     // (`Materializer.Persisted`), and every search scans codes only.
-    val c = mat(corpus
+    val c = Materializer.Local(corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       .select(col("neighbor_id"),
         pqCodesCol(col("c_vec"), codebooks).as("codes")))
@@ -556,9 +556,10 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, seeds: DataFrame,
                 codebooks: Array[Array[Array[Float]]], k: Int,
                 nprobe: Int = 1,
-                idCol: String = "vec_id", vecCol: String = "embedding",
-                mat: Materializer = Materializer.Local): DataFrame =
-    ivfPqSearch(mat(ivfPqIndex(corpus, seeds, codebooks, idCol, vecCol)),
+                idCol: String = "vec_id", vecCol: String = "embedding")
+      : DataFrame =
+    ivfPqSearch(
+      Materializer.Local(ivfPqIndex(corpus, seeds, codebooks, idCol, vecCol)),
       queries, seeds, codebooks, k, nprobe, idCol, vecCol)
 
   /** Reference HOF formulation of the ADC cosine (executable spec of
@@ -735,14 +736,13 @@ object Similarity {
     * (label, dim) partial-combined exchange of exact sums; everything
     * after runs on the labels×dims table with per-cell double algebra
     * round(9) re-summed in DECIMAL. */
-  def fisherSeparation(emb: DataFrame, labelCol: String, vecCol: String,
-                       mat: Materializer = Materializer.Local)
+  def fisherSeparation(emb: DataFrame, labelCol: String, vecCol: String)
       : DataFrame = {
     val x6 = round(col("x").cast("double"), 6).cast("decimal(15,6)")
     // pinned: the (label, dim) cell table feeds the dim totals, the
     // scatter projection AND the k/d driver scalars — unpinned, the
     // corpus explode would run four times
-    val cell = mat(emb
+    val cell = Materializer.Local(emb
       .select(col(labelCol).as("label"),
         posexplode(col(vecCol)).as(Seq("pos", "x")))
       .select(col("label"), col("pos"), x6.as("x"))
@@ -915,8 +915,7 @@ object Similarity {
     * rounds ride the bounded cell table, and the per-point labeling is
     * a broadcast join of that table back onto the stream. */
   def gridDensityClusters(points: DataFrame, idCol: String, xCol: String,
-                          yCol: String, eps: Double, minPts: Long,
-                          mat: Materializer = Materializer.Local)
+                          yCol: String, eps: Double, minPts: Long)
       : DataFrame = {
     require(eps > 0 && minPts >= 1)
     // encoded cell key: (cx + 2^20) * 2^21 + (cy + 2^20) — collision-free
@@ -926,7 +925,7 @@ object Similarity {
     val withCell = points.select(col(idCol).as("pid"),
       floor(col(xCol).cast("double") / lit(eps)).cast("long").as("cx"),
       floor(col(yCol).cast("double") / lit(eps)).cast("long").as("cy"))
-    val cells = mat(withCell.groupBy(col("cx"), col("cy"))
+    val cells = Materializer.Local(withCell.groupBy(col("cx"), col("cy"))
       .agg(count(lit(1)).as("n"))
       .withColumn("k", (col("cx") + lit(B)) * lit(M) + (col("cy") + lit(B))))
     val dense = cells.filter(col("n") >= lit(minPts))
@@ -945,7 +944,7 @@ object Similarity {
       .filter(col("a_key") < col("b_key"))
       .select(col("a_key").as("a_id"), col("b_key").as("b_id"))
       .distinct()
-    val cc = Dedup.nearDupClusters(pairs, mat)
+    val cc = Dedup.nearDupClusters(pairs)
     // both sides are density-bounded; the checkpointed label table has
     // no stats, so pick the broadcast explicitly
     val denseLab = dense

@@ -167,8 +167,7 @@ object Stats {
     * partial-combines to `buckets` rows; everything after is
     * buckets-sized. */
   def psiDrift(ref: DataFrame, cur: DataFrame, valCol: String,
-               buckets: Int = 10,
-               mat: Materializer = Materializer.Local): DataFrame = {
+               buckets: Int = 10): DataFrame = {
     require(buckets >= 2)
     val qs = (1 until buckets).map(i => i.toDouble / buckets)
     val bounds = ref.agg(
@@ -186,14 +185,14 @@ object Stats {
     val c = bucketed(cur).withColumnRenamed("c", "n_cur")
     // pinned: `per` feeds both the totals and the per-bucket output —
     // unpinned, each reference would re-run both slice scans
-    val per = mat(spine
+    val per = Materializer.Local(spine
       .join(r, Seq("bucket"), "left").join(c, Seq("bucket"), "left")
       .select(col("bucket"),
         coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur")))
     val tot = per.agg(sum(col("n_ref")).as("t_ref"),
       sum(col("n_cur")).as("t_cur"))
-    val scored = mat(per.crossJoin(broadcast(tot))
+    val scored = Materializer.Local(per.crossJoin(broadcast(tot))
       .select(col("bucket"), col("n_ref"), col("n_cur"),
         round((col("n_ref") + 1).cast("double")
           / (col("t_ref") + buckets).cast("double"), 9).as("p_ref"),
@@ -254,10 +253,9 @@ object Stats {
     * ≤125-row segment rollup. Exact percentile fences round(6);
     * approx_percentile is the documented 100 TB substitution. */
   def rfmSegments(orders: DataFrame, custCol: String, dateCol: String,
-                  amountCol: String,
-                  mat: Materializer = Materializer.Local): DataFrame = {
+                  amountCol: String): DataFrame = {
     // pinned: the per-customer table feeds the fences AND the scoring
-    val per = mat(orders
+    val per = Materializer.Local(orders
       .groupBy(col(custCol).as("cust"))
       .agg(max(col(dateCol)).as("last_d"),
         count(lit(1)).as("f"),
@@ -310,12 +308,10 @@ object Stats {
     * quotients evaluated once in double, round(6); topN rides
     * TakeOrdered. */
   def associationLift(baskets: DataFrame, basketCol: String,
-                      itemCol: String, minCount: Long, topN: Int,
-                      mat: Materializer = Materializer.Local)
-      : DataFrame = {
+                      itemCol: String, minCount: Long, topN: Int): DataFrame = {
     // pinned: the distinct basket-item table feeds N, item counts, and
     // both pair sides
-    val bi = mat(baskets
+    val bi = Materializer.Local(baskets
       .select(col(basketCol).as("bk"), col(itemCol).as("it"))
       .distinct())
     val n = bi.agg(count_distinct(col("bk")).as("n_baskets"))
@@ -362,11 +358,10 @@ object Stats {
     * table (marginal joins, integer Σ n_a·n_b). p_o/p_e are exact
     * integer quotients evaluated once in double (round 9), kappa one
     * further op, round(6). */
-  def cohenKappa(df: DataFrame, aCol: String, bCol: String,
-                 mat: Materializer = Materializer.Local): DataFrame = {
+  def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     // pinned: the contingency table feeds totals, agreement, and both
     // marginals
-    val ct = mat(df
+    val ct = Materializer.Local(df
       .groupBy(col(aCol).cast("string").as("a"),
         col(bCol).cast("string").as("b"))
       .agg(count(lit(1)).as("c")))
@@ -404,14 +399,13 @@ object Stats {
     * Probabilities round(6) first so both engines bin identical
     * values; ECE contributions round(9) sum in DECIMAL. */
   def calibration(df: DataFrame, probCol: String, labelCol: String,
-                  bins: Int = 10,
-                  mat: Materializer = Materializer.Local): DataFrame = {
+                  bins: Int = 10): DataFrame = {
     require(bins >= 2)
     val rows = df.select(
       round(col(probCol).cast("double"), 6).as("p"),
       col(labelCol).cast("double").as("y"))
     // pinned: the bin table feeds the totals AND the output rows
-    val per = mat(rows
+    val per = Materializer.Local(rows
       .withColumn("bucket",
         least(floor(col("p") * bins), lit(bins - 1)).cast("int"))
       .groupBy(col("bucket"))
@@ -421,7 +415,7 @@ object Stats {
         sum(((col("p") - col("y")) * (col("p") - col("y")))
           .cast("decimal(38,12)")).as("se")))
     val tot = per.agg(sum(col("n")).as("nt"), sum(col("se")).as("set"))
-    val scored = mat(per.crossJoin(broadcast(tot))
+    val scored = Materializer.Local(per.crossJoin(broadcast(tot))
       .select(col("bucket"), col("n"),
         round(col("pm").cast("double") / col("n").cast("double"), 6)
           .as("conf"),
@@ -488,11 +482,9 @@ object Stats {
     * overflow 64 bits at corpus scale) with ONE pinned double op order
     * per cell, contributions round(9), DECIMAL(38,9) totals,
     * round(6). */
-  def contingencyStats(df: DataFrame, aCol: String, bCol: String,
-                       mat: Materializer = Materializer.Local)
-      : DataFrame = {
+  def contingencyStats(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     // pinned: the contingency table feeds totals, marginals, and cells
-    val ct = mat(df
+    val ct = Materializer.Local(df
       .groupBy(col(aCol).cast("string").as("a"),
         col(bCol).cast("string").as("b"))
       .agg(count(lit(1)).as("c")))
@@ -757,18 +749,18 @@ object Stats {
     * (candidate items present)², never |basket|³. Returns
     * (i1, i2, i3, support), (support desc, items asc), topN. */
   def frequentTriples(df: DataFrame, basketCol: String, itemCol: String,
-                      minCount: Long, topN: Int,
-                      mat: Materializer = Materializer.Local): DataFrame = {
+                      minCount: Long, topN: Int): DataFrame = {
     require(minCount >= 1 && topN > 0)
-    val bi = mat(df.select(col(basketCol).as("bk"), col(itemCol).as("it"))
-      .distinct())
+    val bi = Materializer.Local(
+      df.select(col(basketCol).as("bk"), col(itemCol).as("it"))
+        .distinct())
     // pair supports via the basket-aggregation shape (one exchange)
     // instead of the bk-keyed self-join — identical pair multiset, see
     // [[Baskets.basketPairCounts]]
     val pairs = Baskets.basketPairCounts(bi, "bk", "it")
       .select(col("pa").as("i1"), col("pb").as("i2"), col("cm").as("n"))
       .filter(col("n") >= minCount)
-    val fp = mat(pairs.select(col("i1"), col("i2")))
+    val fp = Materializer.Local(pairs.select(col("i1"), col("i2")))
     // extend (a,b) with (a,c), b < c; Apriori-close on (b,c)
     val cands = fp
       .join(fp.select(col("i1"), col("i2").as("i3")), Seq("i1"))
@@ -793,7 +785,7 @@ object Stats {
     // item/pair/candidate sets grow with corpus volume (Heaps/Zipf), so
     // a forced broadcast is the 100x-scale OOM class — the semi joins
     // stay semi joins, AQE broadcasts genuinely small lists
-    val biT = mat(bi.join(fpItems, Seq("it"), "left_semi"))
+    val biT = Materializer.Local(bi.join(fpItems, Seq("it"), "left_semi"))
     // the (bk, i1, i2) enumeration base comes from the same basket
     // aggregation (one exchange, bounded per-basket fan-out) instead of
     // a second bk-keyed self-join; everything after is unchanged
@@ -893,13 +885,12 @@ object Stats {
           .cast("long"), lit(width.toLong)).as("bucket"))): _*))
 
   def cmsHeavyHitters(toks: DataFrame, tokenCol: String, batchCol: String,
-                      depth: Int, width: Int, minShare: Double,
-                      mat: Materializer = Materializer.Local): DataFrame = {
+                      depth: Int, width: Int, minShare: Double): DataFrame = {
     require(depth >= 1 && width >= 2 && minShare > 0)
     def depthBuckets(t: Column): Column = cmsDepthBuckets(t, depth, width)
     // (batch, token) counts feed the sketch cells, the N scalar AND the
     // candidate estimates — pinned once, the corpus scans exactly once
-    val tc = mat(toks.groupBy(col(batchCol).as("batch"),
+    val tc = Materializer.Local(toks.groupBy(col(batchCol).as("batch"),
         col(tokenCol).as("token"))
       .agg(count(lit(1)).as("c")))
     val cells = tc.select(col("batch"), col("c"),
@@ -991,13 +982,12 @@ object Stats {
     * scoring is a broadcast join + projection. */
   def olsResidualOutliers(df: DataFrame, groupCol: String, xCol: String,
                           yCol: String, keepCols: Seq[String],
-                          kSigma: Double,
-                          mat: Materializer = Materializer.Local)
-      : DataFrame = {
+                          kSigma: Double): DataFrame = {
     require(kSigma > 0)
     def d(c: String) = col(c).cast("decimal(19,6)")
-    val base = mat(df.select(col(groupCol).as("grp") +: keepCols.map(col)
-      ++: Seq(col(xCol), col(yCol)): _*))
+    val base = Materializer.Local(
+      df.select(col(groupCol).as("grp") +: keepCols.map(col)
+        ++: Seq(col(xCol), col(yCol)): _*))
     val agg = base.groupBy(col("grp")).agg(
       count(lit(1)).as("n"), sum(d(xCol)).as("sx"), sum(d(yCol)).as("sy"),
       sum(d(xCol) * d(xCol)).as("sxx"),
@@ -1039,15 +1029,14 @@ object Stats {
     * values of either sample, so the histogram is the exact sufficient
     * statistic); the prefix window and the two-row argmax ride that
     * bounded table, and the corpus is never sorted or joined. */
-  def ksDrift(ref: DataFrame, cur: DataFrame, valCol: String,
-              mat: Materializer = Materializer.Local): DataFrame = {
+  def ksDrift(ref: DataFrame, cur: DataFrame, valCol: String): DataFrame = {
     val tagged = ref.select(col(valCol).cast("long").as("v"),
         lit(1L).as("is_ref"))
       .unionAll(cur.select(col(valCol).cast("long").as("v"),
         lit(0L).as("is_ref")))
     // the bounded histogram is the last plan node that sees the corpus;
     // it feeds the totals, the CDF window and the argmax — pinned once
-    val hist = mat(tagged.groupBy(col("v"))
+    val hist = Materializer.Local(tagged.groupBy(col("v"))
       .agg(sum(col("is_ref")).as("ca"),
         sum(lit(1L) - col("is_ref")).as("cb")))
     val w = Window.orderBy(col("v"))
@@ -1081,13 +1070,12 @@ object Stats {
     * groups, never a global sort); the per-group argmax joins the
     * group-table-sized max back as a broadcast. */
   def ksDriftByGroup(ref: DataFrame, cur: DataFrame, groupCol: String,
-                     valCol: String,
-                     mat: Materializer = Materializer.Local): DataFrame = {
+                     valCol: String): DataFrame = {
     val tagged = ref.select(col(groupCol).as("g"),
         col(valCol).cast("long").as("v"), lit(1L).as("is_ref"))
       .unionAll(cur.select(col(groupCol).as("g"),
         col(valCol).cast("long").as("v"), lit(0L).as("is_ref")))
-    val hist = mat(tagged.groupBy(col("g"), col("v"))
+    val hist = Materializer.Local(tagged.groupBy(col("g"), col("v"))
       .agg(sum(col("is_ref")).as("ca"),
         sum(lit(1L) - col("is_ref")).as("cb")))
     val wc = Window.partitionBy(col("g")).orderBy(col("v"))
@@ -1355,15 +1343,13 @@ object Stats {
     * the bounded B-row table (inequality joins on broadcast sides —
     * BNLJ, never a shuffle). Segment means are exact-integer ratios in
     * one pinned double op order, round(9); the fit is round(6). The
-    * bin table is materialized once (`mat`) because three joins
+    * bin table is materialized once because three joins
     * reference it — unpinned, the upstream corpus aggregate would
     * re-execute per reference. */
   def isotonicCalibration(bins: DataFrame, binCol: String, nCol: String,
-                          posCol: String,
-                          mat: Materializer = Materializer.Local)
-      : DataFrame = {
+                          posCol: String): DataFrame = {
     val w = Window.orderBy(col("b")) // bounded bin table: global OK
-    val pre = mat(bins.select(col(binCol).as("b"),
+    val pre = Materializer.Local(bins.select(col(binCol).as("b"),
         col(nCol).cast("long").as("n"), col(posCol).cast("long").as("p"))
       .withColumn("cn", sum(col("n")).over(w))
       .withColumn("cp", sum(col("p")).over(w)))
@@ -2095,14 +2081,12 @@ object Stats {
     * machine-local by construction); the bracket attach is a
     * 10 x n_shards cross join — n_shards is a deployment parameter, not
     * a corpus-growing count, so the broadcast is adjudicated bounded. */
-  def heavyHitterBracket(shardCounts0: DataFrame, kTop: Int,
-                         materialize: Materializer = Materializer.Local)
-      : DataFrame = {
-    val shardCounts = materialize(shardCounts0
+  def heavyHitterBracket(shardCounts0: DataFrame, kTop: Int): DataFrame = {
+    val shardCounts = Materializer.Local(shardCounts0
       .select(col("shard"), col("tok"), col("c")))
     val w = Window.partitionBy(col("shard"))
       .orderBy(col("c").desc, col("tok").asc)
-    val ranked = materialize(
+    val ranked = Materializer.Local(
       shardCounts.withColumn("rk", row_number().over(w)))
     val kept = ranked.filter(col("rk") <= kTop)
       .select(col("shard"), col("tok"), col("c"))

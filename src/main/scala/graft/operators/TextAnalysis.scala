@@ -210,8 +210,8 @@ object TextAnalysis {
     * rebuild runs in the oracle); every aggregate and the final rank
     * window key on the DOC id, so state is doc-bounded and the corpus
     * shuffles (doc, word)/(doc, phrase) rows only. */
-  def rakeKeywords(docs: DataFrame, idCol: String, textCol: String,
-                   mat: Materializer = Materializer.Local): DataFrame = {
+  def rakeKeywords(docs: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stop = langProfiles.flatMap(_._2).toSeq.distinct
     val marked = concat_ws(" ",
@@ -225,7 +225,7 @@ object TextAnalysis {
       .filter(size(split(col("phrase"), " ")) <= 4)
     // pinned: phrase occurrences feed the word stats AND the distinct
     // phrase set
-    val ph = mat(phrases)
+    val ph = Materializer.Local(phrases)
     val pw = ph.select(col("id"), col("phrase"),
       size(split(col("phrase"), " ")).as("plen"),
       explode(split(col("phrase"), " ")).as("word"))
@@ -262,15 +262,14 @@ object TextAnalysis {
     * reduction; the vocab table is Heaps-bounded) and token counts per
     * batch; everything after runs on the `batches`-row table. */
   def vocabGrowth(docs: DataFrame, idCol: String, textCol: String,
-                  batches: Int,
-                  mat: Materializer = Materializer.Local): DataFrame = {
+                  batches: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(batches >= 2)
     val mx = docs.agg(max(col(idCol)).as("mx"))
     // pinned: the (token, batch) explode feeds both reductions.
     // INTEGER division (div), not floor-of-double: an id past 2^53
     // would misround the double quotient, engine-specifically
-    val tb = mat(docs.crossJoin(broadcast(mx))
+    val tb = Materializer.Local(docs.crossJoin(broadcast(mx))
       .select(expr(s"CAST(($batches * $idCol) div (mx + 1) AS INT)")
         .as("batch"),
         explode_outer(tokens(col(textCol))).as("token")))
@@ -301,10 +300,9 @@ object TextAnalysis {
     * the Heaps-bounded vocab table; the rank window and the 5 DECIMAL
     * regression sums (ln terms round(9)) run over that table, never
     * the corpus. */
-  def zipfFit(docs: DataFrame, textCol: String,
-              mat: Materializer = Materializer.Local): DataFrame = {
+  def zipfFit(docs: DataFrame, textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val vocab = mat(docs
+    val vocab = Materializer.Local(docs
       .select(explode_outer(tokens(col(textCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("c")))
     val ranked = vocab
@@ -475,12 +473,11 @@ object TextAnalysis {
     * shuffle join (head terms like "the" are Zipf-skewed — AQE skew-join
     * splits them; [[Skew.saltedJoin]] is the deterministic fallback). The
     * top-N window partitions by doc_id: per-partition state is one
-    * document's vocabulary, bounded by doc length. `mat` pins the per-doc
-    * term counts so the df aggregate and the join-back don't recompute the
-    * tokenize+count subtree twice. */
+    * document's vocabulary, bounded by doc length. The per-doc
+    * term counts are pinned so the df aggregate and the join-back don't
+    * recompute the tokenize+count subtree twice. */
   def tfidfTopTerms(docs: DataFrame, idCol: String, textCol: String,
-                    topN: Int = 3,
-                    mat: Materializer = Materializer.Local): DataFrame = {
+                    topN: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(topN > 0)
     val nDocs = docs.count()
@@ -488,7 +485,7 @@ object TextAnalysis {
       return docs.select(col(idCol).as("doc_id"), lit("").as("term"),
         lit(0L).as("tf"), lit(0L).as("df"), lit(0.0).as("tfidf"),
         lit(0).as("rk")).limit(0)
-    val terms = mat(docs
+    val terms = Materializer.Local(docs
       .select(col(idCol).as("doc_id"),
         explode_outer(tokens(col(textCol))).as("term"))
       .groupBy(col("doc_id"), col("term"))
@@ -519,11 +516,11 @@ object TextAnalysis {
     * flip a bit. Scale shape mirrors [[tfidfTopTerms]]: per-doc tf
     * partial-combines, the corpus frequency table joins back on the term
     * key (Zipf head → AQE skew-join), and the only driver-side scalar is
-    * the total token count. `mat` pins the per-doc term counts so the
+    * the total token count. The per-doc term counts are pinned so the
     * frequency aggregate and the join-back share one computation. */
-  def unigramSurprisal(docs: DataFrame, idCol: String, textCol: String,
-                       mat: Materializer = Materializer.Local): DataFrame = {
-    val terms = mat(docs
+  def unigramSurprisal(docs: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
+    val terms = Materializer.Local(docs
       .select(col(idCol).as("doc_id"),
         explode_outer(tokens(col(textCol))).as("term"))
       .groupBy(col("doc_id"), col("term"))
@@ -671,8 +668,7 @@ object TextAnalysis {
     * contract). */
   def spanDedup(docs: DataFrame, idCol: String, textCol: String,
                 n: Int = 6, minOcc: Long = 2,
-                hashKeys: Boolean = false,
-                mat: Materializer = Materializer.Local): DataFrame = {
+                hashKeys: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(n > 0 && minOcc >= 2)
     def keyed(c: Column): Column = if (hashKeys) xxhash64(c) else c
@@ -685,7 +681,7 @@ object TextAnalysis {
     // projection BELOW the generate: an expression alongside posexplode
     // lands in the Project ABOVE the Generate, re-evaluated once per
     // exploded row — O(len²) per doc (measured 2.5x on this query).
-    val occ = mat(docs
+    val occ = Materializer.Local(docs
       .select(col(idCol).as("doc_id"),
         tokenCount(col(textCol)).cast("long").as("n_toks"),
         col(textCol).as("sd_text"))
@@ -705,7 +701,7 @@ object TextAnalysis {
     // Spark's size check at 100 TB and OOM instead of falling back.
     // Both sides are keyed on sh; AQE still broadcasts a genuinely
     // small span set at runtime.
-    val flagged = mat(occ.join(freq, Seq("sh")))
+    val flagged = Materializer.Local(occ.join(freq, Seq("sh")))
     // canonical keeper per span, via two partial-combined argmin steps
     // (min doc, then min pos within it) instead of a per-span window
     val kDoc = flagged.groupBy(col("sh")).agg(min(col("doc_id")).as("k_doc"))
@@ -801,8 +797,7 @@ object TextAnalysis {
     * accumulates in DECIMAL(38,6) (house dsum rule) so partial-agg
     * order can never flip a bit. */
   def bigramSurprisal(docs: DataFrame, idCol: String, textCol: String,
-                      alpha: Double = 0.5,
-                      mat: Materializer = Materializer.Local): DataFrame = {
+                      alpha: Double = 0.5): DataFrame = {
     val base = docs.select(col(idCol).as("doc_id"),
       tokens(col(textCol)).as("tk"))
     val vocabSize: Double = base
@@ -810,7 +805,7 @@ object TextAnalysis {
       .collect()(0).getLong(0).toDouble
     // per-doc bigram counts; zip_with over the two (n-1)-length slices
     // is map-side (guarded for n < 2 docs, which contribute no bigrams)
-    val tf = mat(base
+    val tf = Materializer.Local(base
       .select(col("doc_id"),
         explode(when(size(col("tk")) >= 2,
           zip_with(
@@ -1016,15 +1011,14 @@ object TextAnalysis {
     * Probabilities are exact-rational doubles with one fixed op order;
     * round(6) absorbs libm ln's last ulp (the q76 convention). */
   def tokenDrift(docs: DataFrame, textCol: String, sliceA: Column,
-                 minCount: Long = 50L,
-                 mat: Materializer = Materializer.Local): DataFrame = {
+                 minCount: Long = 50L): DataFrame = {
     val toks = docs.select(
       when(sliceA, lit(1L)).otherwise(lit(0L)).as("in_a"),
       explode(tokens(col(textCol))).as("token"))
     // materialized: the vocabulary-sized count table feeds both the
     // totals ACTION and the output projection — unmaterialized, the
     // corpus token aggregation runs twice
-    val counts = mat(toks.groupBy(col("token")).agg(
+    val counts = Materializer.Local(toks.groupBy(col("token")).agg(
       sum(col("in_a")).as("n_a"),
       sum(lit(1L) - col("in_a")).as("n_b")))
     val tot = counts
@@ -1132,11 +1126,11 @@ object TextAnalysis {
     * the marginal join-backs; N is one driver scalar baked into the
     * projection. The count table is referenced three ways, so it is
     * materialized once ([[Materializer]]). */
-  def pmiCollocations(docs: DataFrame, textCol: String, minCount: Long,
-                      mat: Materializer = Materializer.Local): DataFrame = {
+  def pmiCollocations(docs: DataFrame, textCol: String, minCount: Long)
+      : DataFrame = {
     val base = docs.select(tokens(col(textCol)).as("tk"))
       .filter(size(col("tk")) >= 2)
-    val c = mat(base
+    val c = Materializer.Local(base
       .select(explode(zip_with(
           slice(col("tk"), lit(1), size(col("tk")) - 1),
           slice(col("tk"), lit(2), size(col("tk")) - 1),
@@ -1171,11 +1165,10 @@ object TextAnalysis {
     * classes, not by corpus rows. Weights are IEEE doubles in one op
     * order, round(6); ranking ties break on the term string. */
   def cTfIdf(docs: DataFrame, classCol: String, textCol: String,
-             topK: Int, mat: Materializer = Materializer.Local)
-      : DataFrame = {
+             topK: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(topK > 0)
-    val tf = mat(docs
+    val tf = Materializer.Local(docs
       .select(col(classCol).as("class"),
         explode(tokens(col(textCol))).as("t"))
       .groupBy(col("class"), col("t"))
@@ -1300,10 +1293,8 @@ object TextAnalysis {
     * size is the one driver scalar.
     */
   def bigramCrossEntropy(docs: DataFrame, idCol: String, textCol: String,
-                         isTrain: Column, alpha: Double = 1.0,
-                         mat: Materializer = Materializer.Local)
-      : DataFrame = {
-    val base = mat(docs.select(col(idCol).as("doc_id"),
+                         isTrain: Column, alpha: Double = 1.0): DataFrame = {
+    val base = Materializer.Local(docs.select(col(idCol).as("doc_id"),
       tokens(col(textCol)).as("tk"), isTrain.as("is_train")))
     def bigrams(df: DataFrame) = df.select(col("doc_id"),
         explode(when(size(col("tk")) >= 2,
@@ -1315,7 +1306,7 @@ object TextAnalysis {
           .as("bg"))
       .groupBy(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .agg(count(lit(1)).as("tf"))
-    val trainTf = mat(bigrams(base.filter(col("is_train"))))
+    val trainTf = Materializer.Local(bigrams(base.filter(col("is_train"))))
     val c2 = trainTf.groupBy(col("w1"), col("w2"))
       .agg(sum(col("tf")).cast("long").as("c2"))
     val c1 = trainTf.groupBy(col("w1"))
@@ -1363,10 +1354,8 @@ object TextAnalysis {
     * round(9) DECIMAL(38,9). Returns ONE row: (n_held_bigrams,
     * n_scored, n_oov, oov_rate, xent_kn, ppl_kn). */
   def kneserNeyXent(docs: DataFrame, idCol: String, textCol: String,
-                    isTrain: Column, discount: Double = 0.75,
-                    mat: Materializer = Materializer.Local)
-      : DataFrame = {
-    val base = mat(docs.select(col(idCol).as("doc_id"),
+                    isTrain: Column, discount: Double = 0.75): DataFrame = {
+    val base = Materializer.Local(docs.select(col(idCol).as("doc_id"),
       tokens(col(textCol)).as("tk"), isTrain.as("is_train")))
     def bigrams(df: DataFrame) = df.select(
         explode(when(size(col("tk")) >= 2,
@@ -1378,7 +1367,7 @@ object TextAnalysis {
           .as("bg"))
       .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .agg(count(lit(1)).as("cnt"))
-    val trainBg = mat(bigrams(base.filter(col("is_train")))
+    val trainBg = Materializer.Local(bigrams(base.filter(col("is_train")))
       .withColumnRenamed("cnt", "c2"))
     val ctx = trainBg.groupBy(col("w1")).agg(
       sum(col("c2")).cast("long").as("c1"), count(lit(1)).as("n1f"))
@@ -1431,7 +1420,7 @@ object TextAnalysis {
     * zero shuffle; the output is the exploded (id, pos, hash) table,
     * ~2/(w+1) of the corpus token mass. Hashes are the first-8-hex-chars
     * md5 form (lexicographic == numeric for fixed-width lowercase hex,
-    * engine-portable). The hash array is materialized first (`mat`) so
+    * engine-portable). The hash array is materialized first so
     * Catalyst's projection collapse cannot inline the md5 transform into
     * every window comparison (the documented nested-HOF re-evaluation
     * trap). Docs with fewer than k tokens contribute their whole text as
@@ -1439,11 +1428,10 @@ object TextAnalysis {
     * at pos 0.
     */
   def winnowingFingerprints(docs: DataFrame, idCol: String,
-                            textCol: String, k: Int = 4, w: Int = 4,
-                            mat: Materializer = Materializer.Local)
+                            textCol: String, k: Int = 4, w: Int = 4)
       : DataFrame = {
     require(k >= 1 && w >= 1)
-    val hashed = mat(docs.select(col(idCol).as("id"),
+    val hashed = Materializer.Local(docs.select(col(idCol).as("id"),
       transform(shingles(col(textCol), k),
         g => substring(md5(g), 1, 8)).as("hs")))
     val m = size(col("hs"))

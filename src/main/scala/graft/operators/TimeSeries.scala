@@ -105,11 +105,11 @@ object TimeSeries {
     * medians are the exact q51-pinned percentile; slope round(6) before
     * the intercept pass so both engines subtract identical bits.
     * Returns (key, n_hours, slope, intercept). */
-  def theilSenTrend(points: DataFrame, keyCol: String, tsCol: String,
-                    mat: Materializer = Materializer.Local): DataFrame = {
+  def theilSenTrend(points: DataFrame, keyCol: String, tsCol: String)
+      : DataFrame = {
     // pinned: the hourly table feeds both pair sides and the intercept
     // pass — unpinned, the corpus aggregation would run three times
-    val abs0 = mat(points
+    val abs0 = Materializer.Local(points
       .groupBy(col(keyCol).as("key"),
         date_trunc("hour", col(tsCol)).as("hour"))
       .agg(count(lit(1)).as("n"))
@@ -153,11 +153,9 @@ object TimeSeries {
     * double op order, round(6); population σ (the profile is the whole
     * window, not a sample). */
   def seasonalAnomalies(points: DataFrame, keyCol: String, tsCol: String,
-                        z: Double = 3.0,
-                        mat: Materializer = Materializer.Local)
-      : DataFrame = {
+                        z: Double = 3.0): DataFrame = {
     // pinned: the hourly table feeds the profile AND the flag join
-    val base = mat(points
+    val base = Materializer.Local(points
       .groupBy(col(keyCol).as("key"),
         date_trunc("hour", col(tsCol)).as("hour"))
       .agg(count(lit(1)).as("n"))
@@ -207,11 +205,10 @@ object TimeSeries {
     * calendar-bounded. Constant series (σ = 0) carry no shift signal
     * and are dropped. */
   def cusumChangepoints(points: DataFrame, keyCol: String, tsCol: String,
-                        slack: Double = 0.5, threshold: Double = 4.0,
-                        mat: Materializer = Materializer.Local)
+                        slack: Double = 0.5, threshold: Double = 4.0)
       : DataFrame = {
     // pinned: the hourly table feeds the profile AND the scored series
-    val base = mat(points
+    val base = Materializer.Local(points
       .groupBy(col(keyCol).as("key"),
         date_trunc("hour", col(tsCol)).as("hour"))
       .agg(count(lit(1)).as("n")))
@@ -266,11 +263,10 @@ object TimeSeries {
     * per-day count. No window function, no range self-join; every
     * aggregate partial-combines. */
   def activeUsers(events: DataFrame, tsCol: String, userCol: String,
-                  window: Int = 7,
-                  mat: Materializer = Materializer.Local): DataFrame = {
+                  window: Int = 7): DataFrame = {
     require(window >= 1)
     // pinned: the user-day table feeds DAU, the fan-out, and the spine
-    val ud = mat(events
+    val ud = Materializer.Local(events
       .select(col(userCol).as("u"), to_date(col(tsCol)).as("day"))
       .distinct())
     val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("dau"))
@@ -305,16 +301,14 @@ object TimeSeries {
     * accumulate in DECIMAL(38,9) (order-proof), one exp at the end,
     * round(6). */
   def kaplanMeierRetention(events: DataFrame, userCol: String,
-                           tsCol: String, censorDays: Int = 7,
-                           mat: Materializer = Materializer.Local)
-      : DataFrame = {
+                           tsCol: String, censorDays: Int = 7): DataFrame = {
     val per = events
       .groupBy(col(userCol).as("u"))
       .agg(to_date(min(col(tsCol))).as("d0"),
         to_date(max(col(tsCol))).as("d1"))
     // pinned: the lifetime histogram feeds the churn rows AND the
     // at-risk suffix sums
-    val lt = mat(per
+    val lt = Materializer.Local(per
       .crossJoin(broadcast(per.agg(max(col("d1")).as("dmax"))))
       .select(datediff(col("d1"), col("d0")).cast("long").as("t"),
         (datediff(col("dmax"), col("d1")) < censorDays).as("censored"))
@@ -404,8 +398,8 @@ object TimeSeries {
     * aggregate of DECIMAL(38,6)-cast detrended values broadcast back.
     * Residual = n − trend − seasonal in one pinned op order,
     * round(6). */
-  def stlDecompose(points: DataFrame, keyCol: String, tsCol: String,
-                   mat: Materializer = Materializer.Local): DataFrame = {
+  def stlDecompose(points: DataFrame, keyCol: String, tsCol: String)
+      : DataFrame = {
     val period = 24
     val half = period / 2
     val base = points
@@ -416,7 +410,7 @@ object TimeSeries {
       .rowsBetween(-half, half - 1)
     // pinned: the detrended table feeds the seasonal profile AND the
     // residual join
-    val detr = mat(base
+    val detr = Materializer.Local(base
       .withColumn("wn", count(lit(1)).over(w))
       .withColumn("ws", sum(col("n")).over(w))
       .filter(col("wn") === period)
@@ -458,10 +452,9 @@ object TimeSeries {
     * (key, hour) partial-combined sum, one join back to attach the
     * actual hour's count. */
   def ewmaHourly(events: DataFrame, keyCol: String, tsCol: String,
-                 window: Int = 24,
-                 mat: Materializer = Materializer.Local): DataFrame = {
+                 window: Int = 24): DataFrame = {
     require(window >= 1 && window <= 62, "2^window must fit a long")
-    val hourly = mat(events
+    val hourly = Materializer.Local(events
       .groupBy(col(keyCol).as("key"), date_trunc("hour", col(tsCol))
         .as("hour"))
       .agg(count(lit(1)).as("n"))

@@ -134,6 +134,15 @@ object ExportSchema {
         a.dbName.equalsIgnoreCase(b.dbName) &&
           typeCompatible(a.dataType, b.dataType) }
 
+  /** Fails unless the `live` table schema [[isCompatibleWith]] `target`;
+    * the message lists both as `name:type`. */
+  def requireCompatible(live: Seq[Field], target: Seq[Field]): Unit = {
+    def show(fs: Seq[Field]) =
+      fs.map(f => s"${f.dbName}:${f.dataType.catalogString}")
+    require(isCompatibleWith(live, target),
+      s"incompatible live schema: ${show(live)} vs ${show(target)}")
+  }
+
   private def typeCompatible(live: DataType, target: DataType): Boolean =
     live == NullType || target == NullType || live == target
 

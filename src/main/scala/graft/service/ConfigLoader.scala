@@ -166,7 +166,8 @@ object ConfigLoader {
       saveAsJson = bool("SaveAsJson", default = false),
       groupFilesByDay = gfbd,
       includeMobile = bool("IncludeMobileAppsFields", default = false),
-      useStartTime = bool("UseStartTime", default = false))
+      useStartTime = bool("UseStartTime", default = false),
+      provider = provider)
     (cfg, warn.result())
   }
 

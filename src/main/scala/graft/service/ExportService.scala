@@ -15,7 +15,8 @@ import graft.transform.{ExportTransform, ValueFormat}
 
 /** Service configuration (reference: config/config.go:141-251 defaults +
   * validation). GroupFilesByDay is the legacy alias for a 24 h duration
-  * (config/config.go:174-180). */
+  * (config/config.go:174-180). `provider` is `Provider`, or the provider
+  * the deprecated `Warehouse` key names (config/config.go:206-223). */
 final case class ServiceConfig(
     startTime: Instant,
     exportDuration: Duration = Duration.ofHours(1),
@@ -26,7 +27,8 @@ final case class ServiceConfig(
     saveAsJson: Boolean = false,
     groupFilesByDay: Boolean = false,
     includeMobile: Boolean = false,
-    useStartTime: Boolean = false) {
+    useStartTime: Boolean = false,
+    provider: Option[String] = None) {
 
   require(!saveAsJson || storageOnly,
     "SaveAsJson requires StorageOnly (reference: config/config.go:247-249)")

@@ -95,10 +95,7 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String,
 
   override def applyExportSchema(schema: Seq[Field]): Unit = {
     val live = getExportTableFields()
-    require(ExportSchema.isCompatibleWith(live, schema),
-      s"incompatible live schema: ${live.map(f =>
-        s"${f.dbName}:${f.dataType.catalogString}")} vs ${schema.map(f =>
-        s"${f.dbName}:${f.dataType.catalogString}")}")
+    ExportSchema.requireCompatible(live, schema)
     ExportSchema.missingFields(live, schema) match {
       case Seq() => ()
       case missing =>

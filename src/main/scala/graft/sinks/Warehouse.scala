@@ -129,10 +129,7 @@ class ParquetWarehouse(spark: SparkSession, tablePath: String)
 
   override def applyExportSchema(schema: Seq[Field]): Unit = {
     val live = getExportTableFields()
-    require(ExportSchema.isCompatibleWith(live, schema),
-      s"incompatible live schema: ${live.map(f =>
-        s"${f.dbName}:${f.dataType.catalogString}")} vs ${schema.map(f =>
-        s"${f.dbName}:${f.dataType.catalogString}")}")
+    ExportSchema.requireCompatible(live, schema)
     writeColumns(schema)
   }
 

@@ -3,11 +3,9 @@ package graft
 import java.nio.file.Files
 import java.time.Instant
 
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.debug.codegenStringSeq
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.schema.ExportSchema
 import graft.sinks.{CsvStage, HadoopStorage, ParquetWarehouse}
@@ -32,21 +30,8 @@ class CodegenSizeSpec extends SparkSpec {
   }
 
   /** The executed plans of the writes `body` runs. */
-  private def writePlans(body: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      ListenerBusDrain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    plans.toArray(Array.empty[SparkPlan]).toSeq
-  }
+  private def writePlans(body: => Unit): Seq[SparkPlan] =
+    actions(body).map(_._2.executedPlan)
 
   test("staging and load projections compile to methods the JIT takes") {
     val dir = Files.createTempDirectory("graft-codegen-size")

@@ -102,8 +102,6 @@ object GuardSweep {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = new java.io.PrintWriter("/tmp/guard_offenders.txt")
     val spark = GraftSession.create("guard-sweep")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("guard-ckpt").toString)
     for ((q, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
       try {
         val analyzed = fn(spark, dir).queryExecution.analyzed

@@ -144,6 +144,45 @@ class MainSpec extends SparkSpec {
       msg.contains("accepted: batch, streaming"), msg)
   }
 
+  test("the deprecated Warehouse key picks the provider's warehouse flavor " +
+      "and storage timeout") {
+    spark // materialize the shared session BEFORE Main so it embeds
+    val tmp = Files.createTempDirectory("graft-main-warehouse-key")
+    val whDir = tmp.resolve("wh").toString
+    // a committed sync point with a row loaded past it, in the same day
+    val sync = java.time.Instant.parse("2020-08-27T07:00:00Z")
+    val wh = new graft.sinks.ParquetWarehouse(spark, whDir)
+    wh.initExportTable(graft.schema.ExportSchema.canonical(false))
+    wh.saveSyncPoint(sync)
+    ExportSchemaRow.blankRow(spark, wh.getExportTableColumns(),
+        "EventStart" -> "2020-08-27T07:30:00Z", "UserId" -> "999")
+      .withColumn("day", org.apache.spark.sql.functions.lit("2020-08-27"))
+      .write.mode("append").partitionBy("day").parquet(s"$whDir/data")
+    Files.writeString(tmp.resolve("raw.json"), "[]")
+    def run(timeout: String): Unit = {
+      val cfg = tmp.resolve("graft.toml")
+      Files.writeString(cfg,
+        s"""StartTime = "2020-08-27T00:00:00Z"
+           |Warehouse = "bigquery"
+           |FixturePath = "${tmp.resolve("raw.json")}"
+           |StageDir = "${tmp.resolve("stage")}"
+           |WarehouseDir = "$whDir"
+           |MaxBundles = "0"
+           |[gcs]
+           |Timeout = "$timeout"
+           |""".stripMargin)
+      Main.main(Array(cfg.toString))
+    }
+    // the gcp provider's storage timeout is read
+    val msg = intercept[IllegalArgumentException](run("5 minutes")).getMessage
+    assert(msg.contains("invalid duration literal"), msg)
+    // the BigQuery flavor rewinds to the day start; the plain Parquet
+    // warehouse would heal the row away and keep the sync point
+    run("5m")
+    assert(wh.lastSyncPoint().contains(
+      java.time.Instant.parse("2020-08-27T00:00:00Z")))
+  }
+
   test("TOML sections scope same-named keys; deprecations warn like the reference") {
     import graft.service.ConfigLoader
     // the reference config has Timeout/Bucket/ExportTable in several

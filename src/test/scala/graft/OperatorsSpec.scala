@@ -76,7 +76,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("minhash LSH finds the near-dup pair and the exact-dup pair") {
-    GraftFunctions.register(spark)
     // bands=16 (one row per band) makes candidate generation deterministic
     // for any pair sharing a single minhash — right for a 5-doc test
     val pairs = Dedup.minhashLshPairs(docsDf, "doc_id", "text",
@@ -88,7 +87,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("simhashHex matches an independent hand computation") {
-    GraftFunctions.register(spark)
     val got = docsDf.filter(col("doc_id") === 4)
       .select(Dedup.simhashHex(col("text"))).collect()(0).getString(0)
     // independent reference computation
@@ -119,7 +117,6 @@ class OperatorsSpec extends SparkSpec {
   test("cosine_sim native expression computes the right values") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (Array(1f, 0f, 0f), Array(1f, 0f, 0f)),
       (Array(1f, 0f, 0f), Array(0f, 1f, 0f)),
@@ -141,7 +138,6 @@ class OperatorsSpec extends SparkSpec {
   test("bruteForceTopK ranks by similarity with id tie-breaks") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     val emb = Seq(
       (0L, Array(1f, 0f)), (1L, Array(0.9f, 0.1f)),
       (2L, Array(0f, 1f)), (3L, Array(1f, 0.01f))
@@ -171,7 +167,6 @@ class OperatorsSpec extends SparkSpec {
   test("VectorAvg aggregator and IVF centroid training separate clusters") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     // two obvious clusters around (1,0) and (0,1)
     val emb = Seq(
       (0L, Array(1f, 0.1f)), (1L, Array(0.1f, 1f)),
@@ -195,7 +190,6 @@ class OperatorsSpec extends SparkSpec {
   test("IVF training works on sparse/snowflake ids (hash-order seeding)") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     // snowflake-style sparse ids: seeding by `id < k` would select an
     // EMPTY seed set here; hash-order seeding must still train k cells
     val emb = Seq(
@@ -212,7 +206,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("simhashNearDupPairs finds near-identical docs with exact hamming") {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val docs = Seq(
@@ -264,7 +257,6 @@ class OperatorsSpec extends SparkSpec {
   test("spanDedup cuts non-keeper duplicated spans, merging overlaps (hand-computed)") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     // doc 1 repeats its own 6-token prefix at position 9; doc 3 repeats it
     // again. 3-gram spans "a b c".."d e f" each occur 3 times; keepers are
     // doc 1 positions 0..3, so doc 1 cuts its second run and doc 3 cuts
@@ -286,7 +278,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("spanDedup hashKeys (8-byte shuffle keys) matches the string-key form") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def run(hk: Boolean) = graft.operators.TextAnalysis
       .spanDedup(docs, "doc_id", "text", n = 6, minOcc = 2, hashKeys = hk)
@@ -329,7 +320,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("native cosine_exact equals the HOF decimal formulation bit-for-bit") {
-    GraftFunctions.register(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val a = emb.select(col("vec_id").as("a_id"), col("embedding").as("a"))
     val b = emb.select(col("vec_id").as("b_id"), col("embedding").as("b"))
@@ -348,7 +338,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("multi-probe LSH and IVF nprobe raise recall@k against brute force") {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     // Clustered fixture (the regime ANN is for): 10 well-separated centers,
@@ -391,7 +380,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("PQ codebooks compress the corpus and keep clustered recall") {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     // same clustered regime as the LSH/IVF recall test
@@ -442,7 +430,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("native pq_adc equals the HOF ADC formulation bit-for-bit") {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(11)
@@ -576,7 +563,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("native hex_hamming matches the HOF digit semantics, edges included") {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(7)
@@ -596,29 +582,6 @@ class OperatorsSpec extends SparkSpec {
     assert(diff.count() == 0)
   }
 
-  test("dedup chain is materializer-agnostic: reliable/persisted == local") {
-    // The executor-loss story (Materializer scaladoc) must not change
-    // results: the same minhash pair-finding + clustering chain through
-    // reliable RDD checkpoint and parquet-persist matches the default
-    // localCheckpoint path row-for-row.
-    import graft.operators.Materializer
-    GraftFunctions.register(spark)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mat").toString
-    spark.sparkContext.setCheckpointDir(s"$tmp/ckpt")
-    def chain(m: Materializer) = {
-      val pairs = Dedup.minhashLshPairs(docsDf, "doc_id", "text",
-        threshold = 0.3, materialize = m)
-      Dedup.nearDupClusters(pairs, materialize = m)
-        .orderBy("doc_id").collect().toSeq
-    }
-    val local = chain(Materializer.Local)
-    assert(local.nonEmpty)
-    assert(chain(Materializer.Reliable) == local)
-    assert(chain(Materializer.Persisted(s"$tmp/idx")) == local)
-    // persisted mode leaves the index artifact on disk (the export path)
-    assert(new java.io.File(s"$tmp/idx").listFiles().nonEmpty)
-  }
-
   test("incremental minhash dedup: old index + new batch equals the full run") {
     // The 100 TB operating mode: the historical corpus is signatured once
     // (minhashIndex, persisted), each new batch joins against it. Band
@@ -626,7 +589,6 @@ class OperatorsSpec extends SparkSpec {
     //   pairs(full corpus) == pairs(old) ∪ incremental(new, index(old))
     // with the two sides disjoint and every incremental pair touching a
     // new id.
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val old = docs.filter(col("doc_id") % 2 === 0)
     val neu = docs.filter(col("doc_id") % 2 === 1)
@@ -651,7 +613,6 @@ class OperatorsSpec extends SparkSpec {
     // record linkage: pairs form ONLY across the two tables — same-side
     // near-dups (left 1~2, right 10~11) must never appear, and ids are not
     // canonicalized (left_id always from the left table)
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val a = "the quick brown fox jumps over the lazy sleeping dog tonight"
@@ -697,7 +658,6 @@ class OperatorsSpec extends SparkSpec {
     // the q108 contract: persisted labels + incremental pairs == CC over
     // the full pair set (possible because every stored label is its
     // cluster's min member id — contraction preserves the component min)
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val evens = docs.filter(col("doc_id") % 2 === 0)
     val odds = docs.filter(col("doc_id") % 2 === 1)
@@ -758,7 +718,6 @@ class OperatorsSpec extends SparkSpec {
     // session that knows nothing but the parquet path — reads it, and the
     // incremental join over the on-disk index matches the all-in-memory
     // run exactly (fast FNV signatures, the production mode).
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val old = docs.filter(col("doc_id") % 2 === 0)
     val neu = docs.filter(col("doc_id") % 2 === 1)
@@ -774,7 +733,6 @@ class OperatorsSpec extends SparkSpec {
       threshold = 0.1))
     // fresh session state: separate registry/catalog/conf, same cluster
     val s2 = spark.newSession()
-    GraftFunctions.register(s2)
     val docs2 = s2.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val fromDisk = toSet(Dedup.minhashLshPairsIncremental(
       Dedup.minhashIndex(docs2.filter(col("doc_id") % 2 === 1),
@@ -789,7 +747,6 @@ class OperatorsSpec extends SparkSpec {
     // knows only the parquet path — results must match the all-in-memory
     // run exactly, and the plan must show the parquet scan feeding the
     // cell equi-join (no float-vector scan, no encode at search time).
-    GraftFunctions.register(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val seeds = emb.filter(col("vec_id") < 4)
     val qs = emb.filter(col("vec_id") < 6)
@@ -802,7 +759,6 @@ class OperatorsSpec extends SparkSpec {
     val inMem = toSet(
       Similarity.ivfPqTopK(emb, qs, seeds, cb, k = 5, nprobe = 2))
     val s2 = spark.newSession()
-    GraftFunctions.register(s2)
     val emb2 = s2.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val fromDisk = Similarity.ivfPqSearch(
       s2.read.parquet(s"$tmp/mat_0"), emb2.filter(col("vec_id") < 6),
@@ -847,7 +803,6 @@ class OperatorsSpec extends SparkSpec {
   test("imageNearDupPairs: corrupt rows excluded; hamming gate hand-checked") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     import graft.operators.Multimodal
     // ids 0 and 75 share a base pattern with zero flips (hamming 0);
     // id 25 flips one bit off the same base (hamming 1 to both);
@@ -868,7 +823,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("incremental image dedup: full == old ∪ incremental, index from disk in a fresh session") {
-    GraftFunctions.register(spark)
     import graft.operators.Multimodal
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sig = Multimodal.extractImageHashes(
@@ -883,7 +837,6 @@ class OperatorsSpec extends SparkSpec {
     graft.operators.Materializer.Persisted(tmp)(
       sig.filter(col("id") % 2 === 0))
     val s2 = spark.newSession()
-    GraftFunctions.register(s2)
     val docs2 = s2.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val newSig = Multimodal.extractImageHashes(
         Multimodal.dhashMediaFromDocuments(docs2)
@@ -902,7 +855,6 @@ class OperatorsSpec extends SparkSpec {
     // the shared 64-bit banded-Hamming machinery is signature-agnostic:
     // the same incremental path that joins image dHashes joins text
     // simhashes — full == old ∪ incremental on the simhash index
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sig = docs.select(col("doc_id").as("id"),
       Dedup.simhashHex(col("text")).as("sig")).localCheckpoint(true)
@@ -935,7 +887,6 @@ class OperatorsSpec extends SparkSpec {
   test("native bpe_encode matches the reference encoder; roundtrip + fixpoint hold") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val merges = graft.operators.Bpe.train(docs, "text", nMerges = 30)
     assert(merges.size == 30)
@@ -1118,7 +1069,6 @@ class OperatorsSpec extends SparkSpec {
     // executable spec; the map-side expression must choose identical cells
     // for every vector, in fast mode and in decimal-exact mode.
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val seeds = emb.filter(col("vec_id") < 8)
     val sd = seeds.select(col("vec_id").as("cell_id"),
@@ -1170,7 +1120,6 @@ class OperatorsSpec extends SparkSpec {
     // CodegenFallback (which would pay interpreted eval + row boxing)
     assert(!classOf[CodegenFallback].isAssignableFrom(
       classOf[graft.functions.NearestCells]))
-    GraftFunctions.register(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents: Seq[(Long, Seq[Float])] = emb.filter(col("vec_id") < 8)
       .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Float](1).toSeq))
@@ -1348,7 +1297,6 @@ class OperatorsSpec extends SparkSpec {
   test("semanticDedupDrops: greedy keep-lowest-id, non-dups survive") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     val embs = Seq(
       (10L, Seq(1.0f, 0.0f, 0.0f)),
       (11L, Seq(1.0f, 0.0f, 0.0f)),  // dup of 10 -> dropped on 10's account
@@ -1475,7 +1423,6 @@ class OperatorsSpec extends SparkSpec {
   test("hardNegativesTopK never returns a same-label neighbor") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     val embs = Seq(
       (0L, Seq(1.0f, 0.0f), 0),
       (1L, Seq(0.99f, 0.14f), 0),  // nearest overall but same label
@@ -1496,7 +1443,6 @@ class OperatorsSpec extends SparkSpec {
   test("semanticContamination flags cosine hits with the best eval match") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     // eval items 0 and 1 (same direction); corpus items 10 and 11 are
     // scalar multiples -> cosine 1.0 against BOTH (best = min e_id);
     // 12 is orthogonal and must be absent
@@ -1573,7 +1519,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("contaminationOverlapBloom equals the exact broadcast form") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val ev = docs.filter(col("doc_id") < 10)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -1672,7 +1617,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("cdcChunks tiles each text exactly and counts duplicate chunks") {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val df = Seq(
@@ -1777,7 +1721,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("audio envelope hash: fixture WAV decodes to formula bits; corrupt flagged; pairs gate") {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     import graft.operators.Multimodal
@@ -1811,7 +1754,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("video first-frame hash: fixture AVI decodes to formula bits; corrupt flagged; pairs gate") {
-    GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     import graft.operators.Multimodal
@@ -1902,7 +1844,6 @@ class OperatorsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     import graft.operators.Overlap
-    GraftFunctions.register(spark)
     // A shingles {a b c, b c d}; B shingles {a b c, b c x}:
     // union 3, intersection 1 -> exact Jaccard 1/3 once k >= 3
     val docs = Seq(("A", "a b c d"), ("B", "a b c x")).toDF("slice", "text")
@@ -1991,7 +1932,6 @@ class OperatorsSpec extends SparkSpec {
     // codebook/seed model, so appending newly-encoded rows to the
     // persisted historical index yields a row-identical index — and
     // therefore an identical search result — to rebuilding from scratch
-    GraftFunctions.register(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val hist = emb.filter(col("vec_id") % 10 =!= 9)
     val fresh = emb.filter(col("vec_id") % 10 === 9)
@@ -2689,7 +2629,6 @@ class OperatorsSpec extends SparkSpec {
   test("bloomPrunedJoin: exactly the plain join, pruning included") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val fact = (1L to 200L).map(i => (i, i % 10)).toDF("fk", "grp")
     val dim = Seq((3L, "x"), (7L, "y"), (500L, "z")).toDF("dk", "tag")
     val got = graft.operators.Skew
@@ -3128,7 +3067,6 @@ class OperatorsSpec extends SparkSpec {
     "pair set") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     // 40 docs: 8 clusters of near-dup template docs + drifted tails
     val words = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta",
       "eta", "theta", "iota", "kappa")
@@ -3177,7 +3115,6 @@ class OperatorsSpec extends SparkSpec {
     "terms in tf order") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     // docs about "spark": the feedback set shares "shuffle shuffle
     // partition"; "zebra" appears only in a non-matching doc
     val df = Seq(
@@ -4020,7 +3957,6 @@ class OperatorsSpec extends SparkSpec {
   test("nnGraphInsert (q295): a fresh session attaches a batch via the " +
     "persisted graph parquet — new-vs-base edges only, matching the " +
     "in-memory insert exactly") {
-    GraftFunctions.register(spark)
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     val base = emb.filter(col("vec_id") >= 10)
@@ -4035,7 +3971,6 @@ class OperatorsSpec extends SparkSpec {
     val inMem = toSet(graft.operators.Similarity.nnGraphInsert(
       g, base, fresh, k = 5))
     val s2 = spark.newSession()
-    GraftFunctions.register(s2)
     val emb2 = s2.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     val fromDisk = graft.operators.Similarity.nnGraphInsert(
@@ -4444,7 +4379,6 @@ class OperatorsSpec extends SparkSpec {
     "dense ranks") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     // two well-separated clusters in 8-dim: cluster = axis direction
     // with a small deterministic per-point wobble on a second axis
     val pts = (0L until 40L).map { i =>
@@ -4505,7 +4439,6 @@ class OperatorsSpec extends SparkSpec {
     "by size with id tie-break; gains shrink, objective accumulates") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(spark)
     val rows = Seq(
       (0L, "alpha beta gamma delta epsilon"),
       (1L, "alpha beta gamma delta epsilon"),
@@ -4654,7 +4587,6 @@ class OperatorsSpec extends SparkSpec {
     // a DIFFERENT session that knows only the two parquet paths. The
     // merged labels must equal the from-scratch clustering of the full
     // corpus (incremental == full recompute, the q108 oracle invariant).
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val evens = docs.filter(col("doc_id") % 2 === 0)
     val idxTmp = java.nio.file.Files.createTempDirectory("graft_q108i").toString
@@ -4672,7 +4604,6 @@ class OperatorsSpec extends SparkSpec {
         k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = true)))
     // fresh session: separate registry/catalog/conf, same cluster
     val s2 = spark.newSession()
-    GraftFunctions.register(s2)
     val docs2 = s2.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val newPairs = Dedup.minhashLshPairsIncremental(
       Dedup.minhashIndex(docs2.filter(col("doc_id") % 2 === 1),
@@ -4690,7 +4621,6 @@ class OperatorsSpec extends SparkSpec {
     // append side is a DIFFERENT session that knows only the parquet
     // path and the frozen codebook; history is never re-scanned, yet the
     // unioned index is row-identical to a from-scratch rebuild
-    GraftFunctions.register(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val seeds = emb.filter(col("vec_id") < 4)
     val cb = Similarity.trainPqCodebooks(emb, m = 8, ksub = 16, iters = 2)
@@ -4701,7 +4631,6 @@ class OperatorsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
     val full = idxSet(Similarity.ivfPqIndex(emb, seeds, cb))
     val s2 = spark.newSession()
-    GraftFunctions.register(s2)
     val emb2 = s2.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val appended = s2.read.parquet(s"$tmp/mat_0")
       .unionByName(Similarity.ivfPqIndex(
@@ -4726,11 +4655,10 @@ class OperatorsSpec extends SparkSpec {
     "plus the overlap and suffix-output edges") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions.{col, call_function, typedlit}
-    graft.functions.GraftFunctions.register(spark)
+    import org.apache.spark.sql.functions.{col, typedlit}
     def hits(text: String, pats: Seq[String]): Seq[Long] =
       Seq(text).toDF("t")
-        .select(call_function("blocklist_hits", col("t"), typedlit(pats)))
+        .select(GraftFunctions.blocklist_hits(col("t"), typedlit(pats)))
         .collect()(0).getSeq[Long](0)
     // replace-based brute force: exactly what the DuckDB oracle computes
     def brute(text: String, pats: Seq[String]): Seq[Long] =
@@ -4792,11 +4720,10 @@ class OperatorsSpec extends SparkSpec {
     "the replace() brute force across the representation threshold") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions.{col, call_function, typedlit}
+    import org.apache.spark.sql.functions.{col, typedlit}
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.StringType
     import org.apache.spark.unsafe.types.UTF8String
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(323)
     def word(n: Int): String =
       (1 to n).map(_ => ('a' + rnd.nextInt(6)).toChar).mkString
@@ -4832,7 +4759,7 @@ class OperatorsSpec extends SparkSpec {
         else word(rnd.nextInt(5) + 1)).mkString)
     val got = texts.toDF("t")
       .select(col("t"),
-        call_function("blocklist_hits", col("t"), typedlit(big)))
+        GraftFunctions.blocklist_hits(col("t"), typedlit(big)))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     for (t <- texts)
       assert(got(t) == brute(t, big), s"sparse mismatch on text=$t")
@@ -4913,11 +4840,10 @@ class OperatorsSpec extends SparkSpec {
     "fixtures land exactly, and the rollup flags degenerate docs") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions.{col, call_function, round}
-    graft.functions.GraftFunctions.register(spark)
+    import org.apache.spark.sql.functions.{col, round}
     def h(text: String): Double =
       Seq(text).toDF("t")
-        .select(round(call_function("char_entropy", col("t")), 6))
+        .select(round(GraftFunctions.char_entropy(col("t")), 6))
         .collect()(0).getDouble(0)
     def brute(text: String): Double = {
       val counts = text.groupBy(identity).view.mapValues(_.length)
@@ -5135,7 +5061,6 @@ class OperatorsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions.{aggregate => hofAgg, _}
-    graft.functions.GraftFunctions.register(spark)
     val pats = Seq("buy now", "fast fast")
     val docs = Seq(
       "plenty of clean text in this document right here",
@@ -5144,7 +5069,7 @@ class OperatorsSpec extends SparkSpec {
       "fast fast duplicated phrase with enough other words here")
       .toDF("text")
     val hitsum = hofAgg(
-      call_function("blocklist_hits", lower(col("text")), typedlit(pats)),
+      GraftFunctions.blocklist_hits(lower(col("text")), typedlit(pats)),
       lit(0L), (a, x) => a + x)
     val out = graft.operators.Sampling.filterFunnel(docs, Seq(
       "min_tokens" ->

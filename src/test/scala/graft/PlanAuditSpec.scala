@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
 /** Physical-plan regression audit: the properties that make these queries
   * survive a 100 TB scale-up must be visible in the executed plan —
   * pushed filters, pruned read schemas, broadcast dimension joins, and no
@@ -10,6 +13,19 @@ class PlanAuditSpec extends SparkSpec {
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+
+  /** The final executed plans of every action that building `result` and
+    * collecting it run, joined into one string to audit. An operator's
+    * `Materializer.Local` pins run as `localCheckpoint` actions, so the
+    * subplans a pin cuts out of the result's own plan are here. */
+  private def ranPlans(result: => DataFrame): String = {
+    val runs = actions(result.collect())
+    assert(runs.exists(_._1 == "localCheckpoint"), runs.map(_._1))
+    runs.map(_._2.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).mkString("\n")
+  }
 
   test("q01: shipdate predicate and column pruning reach the parquet scan") {
     val p = plan("q01_pricing_summary")
@@ -63,7 +79,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("hashpartitioning(vec_id"), p.take(2000))
     // non-exact path: no window operator anywhere — corpus flows scan →
     // project(nearest_cells) → cell equi-join → partial top-k heap
-    graft.functions.GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val np = graft.operators.Similarity
       .ivfTopK(emb, emb.filter(org.apache.spark.sql.functions.col("vec_id") < 30),
@@ -240,17 +255,15 @@ class PlanAuditSpec extends SparkSpec {
     // the corpus pays a map-side hash filter against broadcast thresholds;
     // the rank window must partition by the group key over candidates only.
     // The executed q74 plan hides the candidate stage behind the
-    // materializer's checkpoint, so the broadcast pin audits the operator
-    // with Materializer.Passthrough (same plan, no checkpoint curtain)
+    // checkpoint that pins it, so the broadcast pin audits the plans of
+    // every action the operator runs, the checkpoint's included
     val p = plan("q74_doc_stratified")
     assert(p.contains("hashpartitioning(lang"), p.take(2000))
     assert(!p.contains("Exchange SinglePartition"), p.take(2000))
     assert(!p.contains("CartesianProduct"), p.take(2000))
-    import graft.operators.{Materializer, Sampling}
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val raw = Sampling.stratifiedSample(docs, "lang", "doc_id", 20,
-        materialize = Materializer.Passthrough)
-      .queryExecution.executedPlan.toString
+    val raw = ranPlans(graft.operators.Sampling
+      .stratifiedSample(docs, "lang", "doc_id", 20))
     assert(raw.contains("BroadcastHashJoin"), raw.take(2000))
     assert(raw.contains("hashpartitioning(lang"), raw.take(2000))
     assert(!raw.contains("Exchange SinglePartition"), raw.take(2000))
@@ -463,13 +476,10 @@ class PlanAuditSpec extends SparkSpec {
       p.take(2000))
     // the count table is checkpointed in the production query (it feeds
     // the totals action AND the output), which hides its exchange; audit
-    // the single token shuffle with Materializer.Passthrough
-    import graft.operators.{Materializer, TextAnalysis}
+    // the single token shuffle over every action the operator runs
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val raw = TextAnalysis.tokenDrift(docs, "text",
-        org.apache.spark.sql.functions.col("source") === "src0",
-        minCount = 1L, mat = Materializer.Passthrough)
-      .queryExecution.executedPlan.toString
+    val raw = ranPlans(graft.operators.TextAnalysis.tokenDrift(docs, "text",
+      org.apache.spark.sql.functions.col("source") === "src0", minCount = 1L))
     assert("Exchange hashpartitioning\\(token".r.findAllIn(raw).size == 1,
       raw.take(3000))
     assert("Exchange hashpartitioning".r.findAllIn(raw).size == 1,
@@ -542,7 +552,6 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q123: KMV sketch — shingles/md5 ride the scan, ONE partial-combined exchange") {
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // sketch path (what touches the corpus): exactly one hash exchange on
     // the slice key, with a map-side partial KMinStringsAgg below it
@@ -551,14 +560,13 @@ class PlanAuditSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(ps).size == 1, ps.take(3000))
     assert(ps.contains("partial_kminstringsagg"), ps.take(3000))
-    // full query through Passthrough (a checkpoint would hide the
-    // subplan): the pairwise stage touches only the tiny sketch rows —
-    // no sort-merge join anywhere, corpus never joins
-    val pq = graft.operators.Overlap
-      .sliceOverlap(docs, "lang", "text", 3, 256,
-        graft.operators.Materializer.Passthrough)
-      .orderBy(col("slice_a"), col("slice_b"))
-      .queryExecution.executedPlan.toString
+    // full query over every action it runs (the checkpoint that pins
+    // the sketch hides it from the result's plan): the pairwise stage
+    // touches only the tiny sketch rows — no sort-merge join anywhere,
+    // corpus never joins
+    val pq = ranPlans(graft.operators.Overlap
+      .sliceOverlap(docs, "lang", "text", 3, 256)
+      .orderBy(col("slice_a"), col("slice_b")))
     assert(!pq.contains("SortMergeJoin"), pq.take(3000))
     assert(!pq.contains("CartesianProduct"), pq.take(3000))
   }
@@ -575,15 +583,14 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q125: PMI — bigrams form map-side, marginals join as equi-joins") {
     import org.apache.spark.sql.functions.col
-    // audit through Passthrough: the Local checkpoint would hide the
-    // bigram-count subplan. zip_with rides the scan projection (no
-    // token-position self-join); every join is an equi-join on w1/w2.
+    // audit every action the operator runs: the checkpoint hides the
+    // bigram-count subplan from the result's plan. zip_with rides the
+    // scan projection (no token-position self-join); every join is an
+    // equi-join on w1/w2.
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val p = graft.operators.TextAnalysis
-      .pmiCollocations(docs, "text", 5L,
-        graft.operators.Materializer.Passthrough)
-      .orderBy(col("w1"), col("w2"))
-      .queryExecution.executedPlan.toString
+    val p = ranPlans(graft.operators.TextAnalysis
+      .pmiCollocations(docs, "text", 5L)
+      .orderBy(col("w1"), col("w2")))
     assert(!p.contains("CartesianProduct"), p.take(3000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
     assert(p.contains("zip_with"), p.take(3000))
@@ -795,15 +802,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q155: c-TF-IDF — one corpus exchange, vocab-sized ranking") {
-    // audited through Materializer.Passthrough so the checkpoint does
-    // not hide the corpus subplan (the q84 audit precedent)
+    // audited over every action the operator runs, so the checkpoint
+    // does not hide the corpus subplan
     import org.apache.spark.sql.functions.col
-    val p = graft.operators.TextAnalysis
+    val p = ranPlans(graft.operators.TextAnalysis
       .cTfIdf(spark.read.parquet(s"$dir/documents.parquet"),
-        "source", "text", topK = 5,
-        mat = graft.operators.Materializer.Passthrough)
-      .orderBy(col("class"), col("rk"))
-      .queryExecution.executedPlan.toString
+        "source", "text", topK = 5)
+      .orderBy(col("class"), col("rk")))
     assert(!p.contains("CartesianProduct"), p.take(3000))
     // the only nested-loop join is the 1-row avg-mass broadcast
     assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1,
@@ -1214,10 +1219,10 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q248: HITS score tables broadcast every round — the edge table " +
     "never shuffle-joins") {
-    // hits now checkpoints each contribution table (the 2^(2·iters)
+    // hits checkpoints each contribution table (the 2^(2·iters)
     // plan-explosion fix), which hides the round plans from the query's
-    // executed plan — audit the operator itself in Passthrough mode,
-    // the materializer documented for exactly this
+    // executed plan — audit every action the operator runs, the round
+    // checkpoints included
     import org.apache.spark.sql.functions._
     val edges = spark.read
       .parquet("/root/testdata/sf0.001/orders.parquet")
@@ -1229,9 +1234,7 @@ class PlanAuditSpec extends SparkSpec {
       .select(concat(lit("c"), col("o_custkey")).as("src"),
         concat(lit("s"), col("l_suppkey")).as("dst"))
       .distinct()
-    val p = graft.operators.Graph.hits(edges, iters = 2,
-        mat = graft.operators.Materializer.Passthrough)
-      .queryExecution.executedPlan.toString
+    val p = ranPlans(graft.operators.Graph.hits(edges, iters = 2))
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
     assert(!p.contains("CartesianProduct")
       && !p.contains("SortMergeJoin"), p.take(3000))

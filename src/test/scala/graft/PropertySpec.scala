@@ -388,7 +388,7 @@ class TransformPropertySpec extends SparkSpec {
     // Gibbs' inequality: with add-1 smoothing over the union vocab both
     // slices are proper distributions, so Σ p_a·ln(p_a/p_b) >= 0 for ANY
     // corpus split — a sign error in the probability algebra flips this
-    import graft.operators.{Materializer, TextAnalysis}
+    import graft.operators.TextAnalysis
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions.col
@@ -404,7 +404,7 @@ class TransformPropertySpec extends SparkSpec {
       else {
         val df = rows.toDF("in_a", "text")
         val kl = TextAnalysis.tokenDrift(df, "text", col("in_a"),
-            minCount = 1L, mat = Materializer.Passthrough)
+            minCount = 1L)
           .agg(org.apache.spark.sql.functions.sum(col("kl_term")))
           .collect()(0).getDouble(0)
         kl >= -1e-9

@@ -6,23 +6,31 @@ package graft
 class SqlFunctionsSpec extends SparkSpec {
 
   test("native functions callable from SQL") {
-    graft.functions.GraftFunctions.register(spark)
-    val sim = spark.sql(
+    val s = spark.newSession()
+    graft.functions.GraftFunctions.register(s)
+    val sim = s.sql(
       "SELECT cosine_sim(array(1.0f, 0.0f), array(1.0f, 0.0f)) AS s")
       .collect()(0).getDouble(0)
     assert(sim == 1.0)
-    val sh = spark.sql(
+    val sh = s.sql(
       "SELECT word_shingles(array('a','b','c'), 2) AS s")
       .collect()(0).getSeq[String](0)
     assert(sh == Seq("a b", "b c"))
-    val mh = spark.sql(
+    val mh = s.sql(
       "SELECT minhash_sig(array('a','b','c','d'), 4, 2, true, 0) AS s")
       .collect()(0).getSeq[String](0)
     assert(mh.length == 4 && mh.forall(_.length == 32))
-    val bucket = spark.sql(
+    val bucket = s.sql(
       "SELECT hyperplane_lsh(array(1.0f, -1.0f, 0.5f), 8) AS b")
       .collect()(0).getLong(0)
     assert(bucket >= 0 && bucket < 256)
+  }
+
+  test("the shared test session has no graft function installed") {
+    // every other suite runs its queries here, so a query body or operator
+    // that resolved a graft function by name would fail them
+    for (f <- graft.functions.GraftFunctions.sqlFunctions)
+      assert(!spark.catalog.functionExists(f.name), f.name)
   }
 
   test("GraftExtensions resolves every SQL name of the function table") {

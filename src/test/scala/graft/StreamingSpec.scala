@@ -120,7 +120,6 @@ class StreamingSpec extends SparkSpec {
     // documents.
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def at(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000)
     val longA = "the quick brown fox jumps over the lazy dog while owls watch"
@@ -175,7 +174,6 @@ class StreamingSpec extends SparkSpec {
     // the stream was batched — the differential this test pins.
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.Dedup
     val longA = "the quick brown fox jumps over the lazy dog while " +
       "seven silent owls watch from the tall oak tree at midnight"
@@ -359,7 +357,6 @@ class StreamingSpec extends SparkSpec {
     // the CdcPairs cut scan + digest projection is stateless map-side
     // work, so the dupCounts=false form runs on a streaming frame as-is;
     // only the corpus-wide dup-count window belongs to the batch side.
-    graft.functions.GraftFunctions.register(spark)
     val s = spark
     import s.implicits._
     val df = Seq(
@@ -392,7 +389,6 @@ class StreamingSpec extends SparkSpec {
     // streaming hashes == batch hashes, corrupt rows flagged not dropped.
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.Multimodal
     val docs = Seq((0L, "x"), (25L, "x"), (75L, "x"), (199L, "corrupt"))
       .toDF("doc_id", "text")
@@ -495,7 +491,6 @@ class StreamingSpec extends SparkSpec {
     // rather than a batch-only summary.
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(
       ("en", "the quick brown fox jumps over the lazy dog"),
       ("en", "the quick brown cat naps under the old tree"),

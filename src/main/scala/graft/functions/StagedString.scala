@@ -11,34 +11,29 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One staged CSV cell: a typed value rendered to the string the reference
-  * stages (reference: warehouse/warehouse.go:54-71, redshift.go:101-116),
-  * as one native call per row.
+  * stages (reference: warehouse/warehouse.go:54-71), as one native call per
+  * row.
   *
   *   - timestamp: Go RFC3339Micro in the session time zone, fraction
-  *     trimmed of trailing zeros (`2020-08-27T06:20:26.9Z`), or, with
-  *     `timeString`, Go `Time.String()` (`2020-08-27 06:20:26.9 +0000 UTC`,
-  *     the wall clock of the session zone with a fixed UTC suffix);
+  *     trimmed of trailing zeros (`2020-08-27T06:20:26.9Z`);
   *   - double: Go `%v`, Java's `Double.toString` without a trailing `.0`;
   *   - long / int: decimal;
   *   - string: [[Sanitize]]d.
   *
-  * Longs, ints and strings are cut to `maxChars` characters (Redshift's
-  * VarCharMax - 1; `Int.MaxValue` cuts nothing). With `fill`, null renders
-  * as the empty string. Rendered timestamps and numbers hold no `\n`, `\r`
-  * or NUL, so only strings are sanitized.
+  * With `fill`, null renders as the empty string. Rendered timestamps and
+  * numbers hold no `\n`, `\r` or NUL, so only strings are sanitized.
   *
   * Each rendering equals, byte for byte, the Column chain it replaced
   * (`date_format` + `regexp_replace` for timestamps, `regexp_replace` over
-  * a string cast for doubles, `substring(sanitize(cast))` for the rest);
-  * a differential test pins it. A timestamp whose year is outside
+  * a string cast for doubles, `sanitize(cast)` for the rest); a
+  * differential test pins it. A timestamp whose year is outside
   * 1..9999 is formatted by Spark's own timestamp formatter and trimmed
   * with the chain's regexes, so the rare years keep the chain's output.
   *
   * One small expression per column keeps the staging projection's
   * generated method under HotSpot's 8,000-byte huge-method limit, so the
   * JIT compiles it. */
-case class StagedString(child: Expression, timeString: Boolean,
-                        maxChars: Int, fill: Boolean,
+case class StagedString(child: Expression, fill: Boolean,
                         timeZoneId: Option[String] = None)
     extends UnaryExpression with TimeZoneAwareExpression {
 
@@ -57,7 +52,7 @@ case class StagedString(child: Expression, timeString: Boolean,
   override def withTimeZone(timeZoneId: String): TimeZoneAwareExpression =
     copy(timeZoneId = Option(timeZoneId))
 
-  @transient private lazy val times = new StagedTimes(zoneId, timeString)
+  @transient private lazy val times = new StagedTimes(zoneId)
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = child.eval(input)
@@ -65,10 +60,9 @@ case class StagedString(child: Expression, timeString: Boolean,
     else child.dataType match {
       case TimestampType => times.render(v.asInstanceOf[Long])
       case DoubleType => StagedString.goNumber(v.asInstanceOf[Double])
-      case LongType => StagedString.integral(v.asInstanceOf[Long], maxChars)
-      case IntegerType =>
-        StagedString.integral(v.asInstanceOf[Int].toLong, maxChars)
-      case _ => StagedString.text(v.asInstanceOf[UTF8String], maxChars)
+      case LongType => StagedString.integral(v.asInstanceOf[Long])
+      case IntegerType => StagedString.integral(v.asInstanceOf[Int].toLong)
+      case _ => StagedString.text(v.asInstanceOf[UTF8String])
     }
   }
 
@@ -78,11 +72,11 @@ case class StagedString(child: Expression, timeString: Boolean,
     val kernel = classOf[StagedString].getName
     val call = child.dataType match {
       case TimestampType =>
-        val t = ctx.addReferenceObj("times", new StagedTimes(zoneId, timeString))
+        val t = ctx.addReferenceObj("times", new StagedTimes(zoneId))
         s"$t.render(${c.value})"
       case DoubleType => s"$kernel.goNumber(${c.value})"
-      case LongType | IntegerType => s"$kernel.integral(${c.value}, $maxChars)"
-      case _ => s"$kernel.text(${c.value}, $maxChars)"
+      case LongType | IntegerType => s"$kernel.integral(${c.value})"
+      case _ => s"$kernel.text(${c.value})"
     }
     if (fill) ev.copy(isNull = FalseLiteral, code = code"""
       |${c.code}
@@ -108,25 +102,18 @@ object StagedString {
       if (s.endsWith(".0")) s.substring(0, s.length - 2) else s)
   }
 
-  /** Decimal digits of `v`, cut to `maxChars`. */
-  def integral(v: Long, maxChars: Int): UTF8String =
-    cut(UTF8String.fromString(java.lang.Long.toString(v)), maxChars)
+  /** Decimal digits of `v`. */
+  def integral(v: Long): UTF8String =
+    UTF8String.fromString(java.lang.Long.toString(v))
 
-  /** A staged string: sanitized, cut to `maxChars`. */
-  def text(s: UTF8String, maxChars: Int): UTF8String =
-    cut(Sanitize.kernel(s), maxChars)
-
-  /** The first `maxChars` characters, as `substring(s, 0, maxChars)`. */
-  private def cut(s: UTF8String, maxChars: Int): UTF8String =
-    if (maxChars == Int.MaxValue || s.numBytes <= maxChars) s
-    else s.substringSQL(0, maxChars)
+  /** A staged string: sanitized. */
+  def text(s: UTF8String): UTF8String = Sanitize.kernel(s)
 }
 
 /** The timestamp renderings of [[StagedString]] for one session zone.
   * Serializable: generated code holds one as a reference object, and the
   * references travel to the executors with the task. */
-final class StagedTimes(zone: ZoneId, timeString: Boolean)
-    extends Serializable {
+final class StagedTimes(zone: ZoneId) extends Serializable {
 
   private val rules = zone.getRules
   private val fixedOffset: Option[Int] =
@@ -136,8 +123,7 @@ final class StagedTimes(zone: ZoneId, timeString: Boolean)
   /** The formatter and regexes of the replaced chain, for years outside
     * 1..9999 only. */
   @transient private lazy val formatter = TimestampFormatter(
-    if (timeString) "yyyy-MM-dd HH:mm:ss.SSSSSSSSS"
-    else "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX", zone, isParsing = false)
+    "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX", zone, isParsing = false)
 
   def render(micros: Long): UTF8String = {
     val sec = Math.floorDiv(micros, 1000000L)
@@ -166,18 +152,17 @@ final class StagedTimes(zone: ZoneId, timeString: Boolean)
     var f = frac
     while (fracDigits > 0 && f % 10 == 0) { f /= 10; fracDigits -= 1 }
     // zone: Go RFC3339 prints "Z" or ±hh:mm (the offset's seconds dropped,
-    // as the `XXX` pattern drops them); Time.String() a fixed suffix
+    // as the `XXX` pattern drops them)
     val absH = Math.abs(offset / 3600)
     val absM = Math.abs(offset / 60 % 60)
-    val zoneLen =
-      if (timeString) 10 else if (absH == 0 && absM == 0) 1 else 6
+    val zoneLen = if (absH == 0 && absM == 0) 1 else 6
     val out = new Array[Byte](19 + (if (fracDigits > 0) fracDigits + 1 else 0) + zoneLen)
     digits(out, 0, year.toInt, 4)
     out(4) = '-'
     digits(out, 5, month, 2)
     out(7) = '-'
     digits(out, 8, day, 2)
-    out(10) = (if (timeString) ' ' else 'T')
+    out(10) = 'T'
     digits(out, 11, secOfDay / 3600, 2)
     out(13) = ':'
     digits(out, 14, secOfDay / 60 % 60, 2)
@@ -189,9 +174,7 @@ final class StagedTimes(zone: ZoneId, timeString: Boolean)
       digits(out, at + 1, f, fracDigits)
       at += fracDigits + 1
     }
-    if (timeString) {
-      System.arraycopy(StagedTimes.UtcSuffix, 0, out, at, 10)
-    } else if (zoneLen == 1) out(at) = 'Z'
+    if (zoneLen == 1) out(at) = 'Z'
     else {
       out(at) = (if (offset < 0) '-' else '+')
       digits(out, at + 1, absH, 2)
@@ -207,18 +190,8 @@ final class StagedTimes(zone: ZoneId, timeString: Boolean)
     while (i >= at) { out(i) = ('0' + x % 10).toByte; x /= 10; i -= 1 }
   }
 
-  private def viaFormatter(micros: Long): UTF8String = {
-    val raw = formatter.format(micros)
-    UTF8String.fromString(
-      if (timeString)
-        raw.replaceAll("(\\.\\d*?)0+$", "$1").replaceAll("\\.$", "") +
-          " +0000 UTC"
-      else raw.replaceAll("(\\.\\d*?)0+(Z|[+-])", "$1$2")
-        .replaceAll("\\.(Z|[+-])", "$1"))
-  }
-}
-
-object StagedTimes {
-  private val UtcSuffix: Array[Byte] =
-    " +0000 UTC".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private def viaFormatter(micros: Long): UTF8String =
+    UTF8String.fromString(formatter.format(micros)
+      .replaceAll("(\\.\\d*?)0+(Z|[+-])", "$1$2")
+      .replaceAll("\\.(Z|[+-])", "$1"))
 }

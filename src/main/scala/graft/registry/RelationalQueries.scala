@@ -332,7 +332,7 @@ private[graft] object RelationalQueries {
         col("value").as("evt_value_real"), col("props").as("evt_props_str"))
       val schema = ExportSchema.reconcileWithExisting(
         Seq("IndvId", "UserId", "EventStart", "EventType", "CustomVars"))
-      ExportTransform.toStagedStrings(renamed, schema, ValueFormat.Default)
+      ExportTransform.toStagedStrings(renamed, schema)
         .select(col("IndvId"), col("UserId"), col("EventStart"),
           col("EventType"), col("CustomVars"))
         .orderBy(col("IndvId").cast("long"))

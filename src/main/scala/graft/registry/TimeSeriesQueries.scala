@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, Dedup, Multimodal, Sampling, Sessionize, Similarity, TextAnalysis}
 import graft.schema.ExportSchema
-import graft.transform.{ExportTransform, ValueFormat}
 
 import SparkHelpers._
 import SqlHelpers._

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.{count, lit}
 import graft.schema.{ExportSchema, Field}
 import graft.sinks.{CsvStage, Storage, StorageSyncPoint, Warehouse}
 import graft.sources.DataExportSource
-import graft.transform.{ExportTransform, ValueFormat}
+import graft.transform.ExportTransform
 
 /** Service configuration (reference: config/config.go:141-251 defaults +
   * validation). GroupFilesByDay is the legacy alias for a 24 h duration
@@ -113,7 +113,6 @@ final case class WaitFor(d: Duration) extends StepResult
 class ExportService(spark: SparkSession, config: ServiceConfig,
                     source: DataExportSource, storage: Storage,
                     warehouse: Option[Warehouse],
-                    valueFormat: ValueFormat = ValueFormat.Default,
                     pollInterval: Duration = Duration.ofSeconds(5),
                     now: () => Instant = () => Instant.now()) {
 
@@ -164,7 +163,7 @@ class ExportService(spark: SparkSession, config: ServiceConfig,
     try {
       val raw = source.getExport(id)
       val rows = Observation()
-      def staged = ExportTransform.toStagedStrings(raw, schema, valueFormat)
+      def staged = ExportTransform.toStagedStrings(raw, schema)
         .observe(rows, count(lit(1)))
 
       // Load + commit; sync point saved strictly AFTER the load so a crash

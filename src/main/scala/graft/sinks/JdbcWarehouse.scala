@@ -10,32 +10,27 @@ import org.apache.spark.sql.types._
 
 import graft.schema.{ExportSchema, Field}
 
-/** SQL-warehouse sink executing [[WarehouseSqlDialect]] statements over a
-  * live `java.sql.Connection` — the execution half the reference performs
-  * with sqlx (reference: warehouse/redshift.go:150-163 ExecuteQuery,
-  * :195-238 create/alter, :266-328 sync-point log, :330-354 orphan heal).
+/** SQL-warehouse sink executing [[DerbySql]] statements over a live
+  * `java.sql.Connection` — the execution half the reference performs with
+  * sqlx (reference: warehouse/redshift.go:150-163 ExecuteQuery, :195-238
+  * create/alter, :266-328 sync-point log, :330-354 orphan heal). The
+  * tables are `"export"` and `"sync_table"` in the connection's default
+  * schema.
   *
-  * The bulk load is the stage-then-COPY pattern, the default
-  * [[Warehouse.loadRows]]: `CsvStage` stages the object, and
-  *   - on Redshift the single `RedshiftSql.copyFrom` statement loads it
-  *     server-side (pass a `copyCredentials`);
-  *   - everywhere else the staged CSV is read back by Spark and written
-  *     through Spark's JDBC batch writer — a DISTRIBUTED insert (one
-  *     connection + batched prepared statements per partition), not a
-  *     driver-side row loop, so the load scales with executors.
+  * The bulk load is the default stage-then-load [[Warehouse.loadRows]]:
+  * `CsvStage` stages the object, and [[loadToWarehouse]] reads it back
+  * with Spark and writes it through Spark's JDBC batch writer — a
+  * DISTRIBUTED insert (one connection + batched prepared statements per
+  * partition), not a driver-side row loop, so the load scales with
+  * executors.
   *
   * Schema introspection goes through JDBC `DatabaseMetaData.getColumns`
   * (ordinal-ordered per the JDBC spec), the information_schema analog the
   * reference queries at redshift.go:370-394 — and carries TYPES, so the
   * type-aware reconciliation check applies to live tables.
   */
-class JdbcWarehouse(spark: SparkSession, jdbcUrl: String,
-                    dialect: WarehouseSqlDialect = DerbySql,
-                    dbSchema: Option[String] = None,
-                    exportTable: String = "export",
-                    syncTable: String = "sync_table",
-                    copyCredentials: Option[String] = None)
-    extends Warehouse {
+class JdbcWarehouse(spark: SparkSession, jdbcUrl: String) extends Warehouse {
+  import JdbcWarehouse.{ExportTable, SyncTable}
 
   JdbcWarehouse.ensureDerbyDialect()
 
@@ -50,16 +45,16 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String,
   }
 
   private def tableExists(c: Connection, table: String): Boolean = {
-    val rs = c.getMetaData.getTables(null, dbSchema.orNull, table, null)
+    val rs = c.getMetaData.getTables(null, null, table, null)
     try rs.next() finally rs.close()
   }
 
   override def initExportTable(schema: Seq[Field]): Boolean = withConn { c =>
-    val existed = tableExists(c, exportTable)
+    val existed = tableExists(c, ExportTable)
     if (!existed)
-      exec(dialect.createTable(dbSchema, exportTable, schema))
-    if (!tableExists(c, syncTable))
-      exec(dialect.createTable(dbSchema, syncTable, syncFields))
+      exec(DerbySql.createTable(ExportTable, schema))
+    if (!tableExists(c, SyncTable))
+      exec(DerbySql.createTable(SyncTable, syncFields))
     !existed
   }
 
@@ -80,7 +75,7 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String,
 
   /** Live ordered columns WITH types from JDBC metadata. */
   def getExportTableFields(): Seq[Field] = withConn { c =>
-    val rs = c.getMetaData.getColumns(null, dbSchema.orNull, exportTable, null)
+    val rs = c.getMetaData.getColumns(null, null, ExportTable, null)
     val buf = scala.collection.mutable.ArrayBuffer[Field]()
     try {
       while (rs.next())
@@ -99,7 +94,7 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String,
     ExportSchema.missingFields(live, schema) match {
       case Seq() => ()
       case missing =>
-        dialect.addColumns(dbSchema, exportTable, missing).foreach(exec)
+        DerbySql.addColumns(ExportTable, missing).foreach(exec)
     }
   }
 
@@ -108,43 +103,36 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String,
     if (truncateDay) {
       val dayStart = bundleStart.atOffset(ZoneOffset.UTC).toLocalDate
         .atStartOfDay(ZoneOffset.UTC).toInstant
-      exec(dialect.deleteDayRange(dbSchema, exportTable, dayStart,
+      exec(DerbySql.deleteDayRange(ExportTable, dayStart,
         dayStart.plus(java.time.Duration.ofDays(1))))
     }
-    copyCredentials match {
-      case Some(creds) => // server-side COPY (Redshift path)
-        exec(RedshiftSql.copyFrom(dbSchema, exportTable, csvRef, creds))
-      case None => // distributed JDBC batch insert
-        val fields = getExportTableFields()
-        val stagedSchema = StructType(
-          fields.map(f => StructField(f.dbName, StringType)))
-        val staged = spark.read
-          .option("header", "true").option("escape", "\"")
-          .schema(stagedSchema)
-          .csv(csvRef)
-        // empty cells -> NULL; COPY parses strings into column types, the
-        // JDBC path casts the same way before the batched insert
-        val typed = staged.select(fields.map { f =>
-          val c = when(col(f.dbName) === "", lit(null)).otherwise(col(f.dbName))
-          (f.dataType match {
-            case TimestampType => to_timestamp(c)
-            case NullType => c
-            case dt => c.cast(dt)
-          }).as(f.dbName)
-        }: _*)
-        typed.write.mode("append")
-          .jdbc(jdbcUrl, dialect.qualifiedName(dbSchema, exportTable),
-            new Properties())
-    }
+    val fields = getExportTableFields()
+    val stagedSchema = StructType(
+      fields.map(f => StructField(f.dbName, StringType)))
+    val staged = spark.read
+      .option("header", "true").option("escape", "\"")
+      .schema(stagedSchema)
+      .csv(csvRef)
+    // empty cells -> NULL, and strings parsed into the column types, as
+    // the reference's COPY does, before the batched insert
+    val typed = staged.select(fields.map { f =>
+      val c = when(col(f.dbName) === "", lit(null)).otherwise(col(f.dbName))
+      (f.dataType match {
+        case TimestampType => to_timestamp(c)
+        case NullType => c
+        case dt => c.cast(dt)
+      }).as(f.dbName)
+    }: _*)
+    typed.write.mode("append")
+      .jdbc(jdbcUrl, DerbySql.quote(ExportTable), new Properties())
   }
 
   override def lastSyncPoint(): Option[Instant] = withConn { c =>
-    if (!tableExists(c, syncTable)) None
+    if (!tableExists(c, SyncTable)) None
     else {
       val st = c.createStatement()
       try {
-        val rs = st.executeQuery(
-          dialect.maxQuery(dbSchema, syncTable, "BundleEndTime"))
+        val rs = st.executeQuery(DerbySql.maxQuery(SyncTable, "BundleEndTime"))
         try {
           if (rs.next()) Option(rs.getTimestamp(1)).map(_.toInstant) else None
         } finally rs.close()
@@ -155,7 +143,7 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String,
   override def saveSyncPoint(bundleEnd: Instant): Unit = withConn { c =>
     // (ID=-1, Processed=now, BundleEndTime) — reference: redshift.go:275-276
     val ps = c.prepareStatement(
-      s"INSERT INTO ${dialect.qualifiedName(dbSchema, syncTable)} " +
+      s"INSERT INTO ${DerbySql.quote(SyncTable)} " +
         s"""("ID", "Processed", "BundleEndTime") VALUES (?, ?, ?)""")
     try {
       ps.setLong(1, -1L)
@@ -170,8 +158,7 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String,
   def maxEventStart(): Option[Instant] = withConn { c =>
     val st = c.createStatement()
     try {
-      val rs = st.executeQuery(
-        dialect.maxQuery(dbSchema, exportTable, "EventStart"))
+      val rs = st.executeQuery(DerbySql.maxQuery(ExportTable, "EventStart"))
       try {
         if (rs.next()) Option(rs.getTimestamp(1)).map(_.toInstant) else None
       } finally rs.close()
@@ -181,11 +168,14 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String,
   override def removeOrphanedRecords(syncPoint: Instant): Unit = {
     val orphaned = maxEventStart().exists(!_.isBefore(syncPoint))
     if (orphaned)
-      exec(dialect.deleteOrphans(dbSchema, exportTable, syncPoint))
+      exec(DerbySql.deleteOrphans(ExportTable, syncPoint))
   }
 }
 
 object JdbcWarehouse {
+  private val ExportTable = "export"
+  private val SyncTable = "sync_table"
+
   // Spark's built-in Derby dialect maps StringType -> CLOB; setNull(CLOB)
   // against our VARCHAR export columns throws. Register a VARCHAR override
   // (later registrations win) once per JVM.

@@ -14,12 +14,12 @@ import graft.schema.{ExportSchema, Field}
   * schema evolution, the bundle load, the committed sync point, and
   * crash-recovery healing.
   *
-  * A bundle reaches the table through [[loadRows]]. A warehouse outside
-  * the process (Redshift `COPY`, a BigQuery load job) reads a staged
-  * object, so the default stages one, bulk-loads it with
-  * [[loadToWarehouse]] and deletes it. A warehouse that Spark writes
-  * itself ([[ParquetWarehouse]]) overrides it and writes the rows straight
-  * into the table: one Spark job per bundle, with no object staged.
+  * A bundle reaches the table through [[loadRows]]. Its default stages
+  * the rows as one CSV object, bulk-loads that with [[loadToWarehouse]]
+  * and deletes it; [[JdbcWarehouse]] loads this way. A warehouse that
+  * Spark writes itself ([[ParquetWarehouse]]) overrides it and writes the
+  * rows straight into the table: one Spark job per bundle, with no object
+  * staged.
   */
 trait Warehouse {
   /** Create the export table if missing; true if created

@@ -23,7 +23,7 @@ final case class ExportFailedError(details: String)
   *
   * Wire protocol (reference: client/export.go, client/operations.go):
   *   - `POST {api}/segments/v1/exports` with
-  *     `{segmentId, type: TYPE_EVENT, format: FORMAT_JSON,
+  *     `{segmentId: "everyone", type: TYPE_EVENT, format: FORMAT_JSON,
   *       segmentTimeRange: {"",""}, timeRange: {start,end RFC3339}, fields}`
   *     -> `{"operationId"}` (export.go:50-89);
   *   - `GET {api}/operations/v1/{id}` ->
@@ -33,35 +33,22 @@ final case class ExportFailedError(details: String)
   *     then a VANILLA unauthenticated GET of the signed location URL
   *     streams the bundle (export.go:102-134, auth note :119-121).
   *
-  * Every API request carries `Authorization: Basic <token>` plus any
-  * additional headers (reference: client/transport.go:20-30). A non-200
+  * Every API request carries `Authorization: Basic <token>`
+  * (reference: client/transport.go:20-30). A non-200
   * response raises [[RetryPolicy.Retryable]] — the StatusError analog
   * (client/client.go:95-130) — with the integer-seconds `Retry-After`
   * attached, so the service loop's existing backoff classification
   * (`RetryPolicy.retryInfo`: a non-429 sub-500 status is fatal) applies
   * unchanged. The client itself never retries, exactly like the reference;
   * retrying is the service loop's job (internal/service.go:231-245).
-  *
-  * `httpClient` replaces the transport (the WithHttpClient option,
-  * client.go:63-69); `createRequestModifier` rewrites the create request
-  * before sending (the WithCreateExportRequestModifier option,
-  * client.go:55-61).
   */
-class HttpExportClient(
-    apiUrl: String,
-    apiToken: String,
-    additionalHeaders: Seq[(String, String)] = Nil,
-    httpClient: HttpClient = HttpClient.newHttpClient(),
-    createRequestModifier: HttpRequest.Builder => HttpRequest.Builder =
-      identity) {
+class HttpExportClient(apiUrl: String, apiToken: String) {
 
+  private val httpClient = HttpClient.newHttpClient()
   private val mapper = new ObjectMapper()
 
   private def authed(b: HttpRequest.Builder): HttpRequest.Builder =
-    additionalHeaders.foldLeft(
-      b.header("Authorization", s"Basic $apiToken")) {
-      case (bb, (k, v)) => bb.header(k, v)
-    }
+    b.header("Authorization", s"Basic $apiToken")
 
   private def statusError(code: Int,
                           headers: java.net.http.HttpHeaders): Throwable = {
@@ -78,12 +65,13 @@ class HttpExportClient(
     resp.body()
   }
 
-  /** Start an async export of [start, end) for `fields`; returns the
-    * operation id (reference: client/export.go:50-89). */
-  def createExport(start: Instant, end: Instant, fields: Seq[String],
-                   segmentId: String = "everyone"): String = {
+  /** Start an async export of [start, end) for `fields` over the
+    * `everyone` segment; returns the operation id
+    * (reference: client/export.go:50-89). */
+  def createExport(start: Instant, end: Instant,
+                   fields: Seq[String]): String = {
     val root = mapper.createObjectNode()
-    root.put("segmentId", segmentId)
+    root.put("segmentId", "everyone")
     root.put("type", "TYPE_EVENT")
     root.put("format", "FORMAT_JSON")
     // empty segment time range = "All Time" (export.go:55-56)
@@ -97,7 +85,7 @@ class HttpExportClient(
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(
         mapper.writeValueAsString(root)))
-    val req = createRequestModifier(authed(b)).build()
+    val req = authed(b).build()
     mapper.readTree(send(req)).path("operationId").asText()
   }
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.service.{ExportService, ServiceConfig}
 import graft.sinks.{Storage, Warehouse}
-import graft.transform.{ExportTransform, ValueFormat}
+import graft.transform.ExportTransform
 
 /** Structured-Streaming front door for the CLI's incremental lifecycle
   * (`Mode = "streaming"`): the same contract as
@@ -80,8 +80,7 @@ object StreamingService {
       .load(rawDir)
       .filter(col("EventStart") >= lit(lastSync.toString).cast("timestamp")
         && col("EventStart") < lit(syncEnd.toString).cast("timestamp"))
-    val staged = ExportTransform.toStagedStrings(raw, schema,
-      ValueFormat.Default)
+    val staged = ExportTransform.toStagedStrings(raw, schema)
 
     val query = staged.writeStream
       .option("checkpointLocation", checkpointDir)

@@ -9,21 +9,19 @@ import org.apache.spark.sql.types._
 import graft.functions.{Sanitize, StagedString}
 import graft.schema.Field
 
-/** Per-sink value rendering strategy (reference: warehouse/warehouse.go:54-71
-  * default; warehouse/redshift.go:101-116 Redshift variant). All output is
-  * strings — the staging format is CSV.
+/** The staged value format (reference: warehouse/warehouse.go:54-71):
+  * RFC3339Micro times, Go `%v` doubles, decimal integers, sanitized
+  * strings. All output is strings — the staging format is CSV.
   *
   * Each staged column is one native [[graft.functions.StagedString]]
   * expression: it renders the typed value, sanitizes strings, and turns
   * null into the empty string, in one call per row. No regex and no
   * datetime pattern is evaluated per row. */
-sealed trait ValueFormat {
+object ValueFormat {
+
   /** Render one column, cast to `f`'s type, to its staged string form;
     * null renders as the empty string. */
-  def render(c: Column, f: Field): Column
-}
-
-object ValueFormat {
+  def render(c: Column, f: Field): Column = staged(typed(c, f), fill = true)
 
   /** Strip newline/CR to space and drop NUL bytes
     * (reference: warehouse/warehouse.go:66-69), through the one-scan
@@ -38,18 +36,14 @@ object ValueFormat {
     * (reference: warehouse/warehouse.go:59-65, format RFC3339Micro
     * `2006-01-02T15:04:05.999999Z07:00`). A null time stays null. */
   def goRfc3339Micro(c: Column): Column =
-    staged(c.cast(TimestampType), timeString = false, Int.MaxValue,
-      fill = false)
+    staged(c.cast(TimestampType), fill = false)
 
   /** Go renders float64 via %v: whole doubles print without ".0". A null
     * stays null. */
-  def goNumber(c: Column): Column =
-    staged(c.cast(DoubleType), timeString = false, Int.MaxValue, fill = false)
+  def goNumber(c: Column): Column = staged(c.cast(DoubleType), fill = false)
 
-  private def staged(c: Column, timeString: Boolean, maxChars: Int,
-                     fill: Boolean): Column =
-    GraftColumns.column(StagedString(GraftColumns.expression(c), timeString,
-      maxChars, fill))
+  private def staged(c: Column, fill: Boolean): Column =
+    GraftColumns.column(StagedString(GraftColumns.expression(c), fill))
 
   /** The column cast to the kernel's input type: a timestamp, double,
     * long, int or string stays as it is typed; anything else is staged as
@@ -58,22 +52,6 @@ object ValueFormat {
     case TimestampType | DoubleType | LongType | IntegerType | StringType =>
       c.cast(f.dataType)
     case _ => c.cast(f.dataType).cast(StringType)
-  }
-
-  /** Default (storage / BigQuery) strategy
-    * (reference: warehouse/warehouse.go:54-71): RFC3339Micro times, Go
-    * `%v` doubles, decimal integers, sanitized strings. */
-  case object Default extends ValueFormat {
-    def render(c: Column, f: Field): Column =
-      staged(typed(c, f), timeString = false, Int.MaxValue, fill = true)
-  }
-
-  /** Redshift strategy: Go `t.String()` timestamp format
-    * (`2020-08-27 06:20:26.9 +0000 UTC`) and strings and integers cut to
-    * VarCharMax-1 characters (reference: warehouse/redshift.go:101-116). */
-  final case class Redshift(varCharMax: Int = 65535) extends ValueFormat {
-    def render(c: Column, f: Field): Column =
-      staged(typed(c, f), timeString = true, varCharMax - 1, fill = true)
   }
 }
 
@@ -88,8 +66,8 @@ object ValueFormat {
   *     (internal/service.go:99-102),
   *   - spillover of all non-schema columns into one CustomVars JSON map,
   *     original key case preserved (internal/service.go:86-96,104-109),
-  *   - per-sink cast/render/sanitize/truncate, one native expression per
-  *     column (warehouse/warehouse.go:54-71).
+  *   - cast/render/sanitize, one native expression per column
+  *     (warehouse/warehouse.go:54-71).
   */
 object ExportTransform {
 
@@ -97,8 +75,7 @@ object ExportTransform {
     * per the case-insensitive membership rule (P4). Returns the live-order
     * staged projection (P5/P6): all columns rendered to string, one column
     * per schema field plus the CustomVars JSON spillover. */
-  def toStagedStrings(df: DataFrame, schema: Seq[Field],
-                      fmt: ValueFormat = ValueFormat.Default): DataFrame = {
+  def toStagedStrings(df: DataFrame, schema: Seq[Field]): DataFrame = {
     val inputByLower = df.columns.map(c => c.toLowerCase -> c).toMap
     val schemaLower = schema.flatMap(f =>
       if (f.isDbOnly) None else Some(f.sourceName.toLowerCase)).toSet
@@ -121,7 +98,7 @@ object ExportTransform {
     val staged = schema.map { f =>
       if (f.sourceName == "CustomVars") customVars.as(f.dbName)
       else inputByLower.get(f.sourceName.toLowerCase) match {
-        case Some(in) if !f.isDbOnly => fmt.render(col(in), f).as(f.dbName)
+        case Some(in) if !f.isDbOnly => ValueFormat.render(col(in), f).as(f.dbName)
         case _ => lit("").as(f.dbName) // DB-only or absent source field
       }
     }

@@ -27,6 +27,10 @@ class PlanAuditSpec extends SparkSpec {
     }).mkString("\n")
   }
 
+  /** [[ranPlans]] of registry query `q`. */
+  private def ranPlans(q: String): String =
+    ranPlans(SparkEntry.queries(q)(spark, dir))
+
   test("q01: shipdate predicate and column pruning reach the parquet scan") {
     val p = plan("q01_pricing_summary")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThan(l_shipdate"))
@@ -1401,6 +1405,12 @@ class PlanAuditSpec extends SparkSpec {
     val p3 = plan("q290_rbo_rankers")
     assert(!p3.contains("CartesianProduct"), p3.take(3000))
     assert(p3.contains("BroadcastHashJoin"), p3.take(3000))
+    // below the checkpoints too: every plan the three queries run
+    for (q <- Seq("q285_bradley_terry", "q288_feature_hash_audit",
+        "q290_rbo_rankers")) {
+      val ran = ranPlans(q)
+      assert(!ran.contains("CartesianProduct"), s"$q: ${ran.take(3000)}")
+    }
   }
 
   test("q287/q289: min-k windows partition on doc_id (no global " +
@@ -1414,12 +1424,16 @@ class PlanAuditSpec extends SparkSpec {
     // everything corpus-scale sits below the sim-matrix checkpoint
     val p2 = plan("q289_facility_location")
     assert(!p2.contains("CartesianProduct"), p2.take(3000))
+    val ran = ranPlans("q289_facility_location")
+    assert(!ran.contains("CartesianProduct"), ran.take(3000))
   }
 
   test("q286: NN-descent's audited plan joins the truth by id keys " +
     "only — no cartesian; the graph rounds live below checkpoints") {
     val p = plan("q286_nn_descent")
     assert(!p.contains("CartesianProduct"), p.take(3000))
+    val ran = ranPlans("q286_nn_descent")
+    assert(!ran.contains("CartesianProduct"), ran.take(3000))
   }
 
   test("q291/q292/q293: CF-eval and posting-gap windows partition on " +
@@ -1458,6 +1472,8 @@ class PlanAuditSpec extends SparkSpec {
     val p = plan("q297_voptimal_hist")
     assert(!p.contains("CartesianProduct"), p.take(3000))
     assert(!p.contains("SortMergeJoin"), p.take(3000))
+    val ran = ranPlans("q297_voptimal_hist")
+    assert(!ran.contains("CartesianProduct"), ran.take(3000))
   }
 
   test("q305: the distributed-merge path adds one shard-histogram " +
@@ -1563,6 +1579,8 @@ class PlanAuditSpec extends SparkSpec {
     "table via token-keyed joins — no cartesian") {
     val p = plan("q303_curation_ablation")
     assert(!p.contains("CartesianProduct"), p.take(3000))
+    val ran = ranPlans("q303_curation_ablation")
+    assert(!ran.contains("CartesianProduct"), ran.take(3000))
   }
 
   test("q304: CWS model equi-joins into the tf stream UNHINTED (vocab " +

@@ -75,8 +75,8 @@ object StageKernelBench {
         else render(col(f.sourceName), f).as(f.dbName)): _*)
     val forms = Seq(
       "pass-through" -> ((c: Column, _: graft.schema.Field) => c),
-      "Column chain" -> StagedStringSpec.Reference.render(ValueFormat.Default) _,
-      "native renderer" -> ValueFormat.Default.render _)
+      "Column chain" -> StagedStringSpec.Reference.render _,
+      "native renderer" -> ValueFormat.render _)
     def time(out: DataFrame): Double = {
       val t0 = System.nanoTime()
       out.write.format("noop").mode("overwrite").save()

@@ -16,14 +16,11 @@ import graft.transform.ValueFormat
 /** The native staged-column renderer ([[graft.functions.StagedString]],
   * through [[ValueFormat]]) against the Column chain it replaced
   * ([[StagedStringSpec.Reference]]), byte for byte: interpreted, generated
-  * code, and a Spark job; for the Default and Redshift formats and for
-  * session time zones with and without DST. */
+  * code, and a Spark job; for session time zones with and without DST. */
 class StagedStringSpec extends SparkSpec {
   import StagedStringSpec._
 
   private val zones = Seq("UTC", "America/Los_Angeles", "Asia/Kolkata")
-  private val formats: Seq[ValueFormat] =
-    Seq(ValueFormat.Default, ValueFormat.Redshift(), ValueFormat.Redshift(6))
 
   private def withZone[T](zone: String)(body: => T): T = {
     val key = "spark.sql.session.timeZone"
@@ -44,10 +41,10 @@ class StagedStringSpec extends SparkSpec {
   }
 
   test("renderer == the replaced Column chain: interpreted and codegen, " +
-    "Default and Redshift, three session zones") {
-    for (zone <- zones; fmt <- formats) withZone(zone) {
-      val kernel = bound(columns(fmt.render))
-      val reference = bound(columns(Reference.render(fmt)))
+    "three session zones") {
+    for (zone <- zones) withZone(zone) {
+      val kernel = bound(columns(ValueFormat.render))
+      val reference = bound(columns(Reference.render))
       val compiled = GenerateUnsafeProjection.generate(kernel)
       val prop = Prop.forAll(rowGen) { row =>
         val want = reference.map(_.eval(row))
@@ -55,13 +52,13 @@ class StagedStringSpec extends SparkSpec {
         val gen = compiled(row)
         val fromCode = kernel.indices.map(i => gen.getUTF8String(i))
         val ok = got == want && fromCode == want
-        if (!ok) println(s"$zone $fmt: row ${row.toSeq(inputSchema)}\n" +
+        if (!ok) println(s"$zone: row ${row.toSeq(inputSchema)}\n" +
           s"  want $want\n  got  $got\n  code $fromCode")
         ok
       }
       val res = Test.check(
         Test.Parameters.default.withMinSuccessfulTests(3000), prop)
-      assert(res.passed, s"$zone $fmt: ${res.status}")
+      assert(res.passed, s"$zone: ${res.status}")
     }
   }
 
@@ -76,12 +73,11 @@ class StagedStringSpec extends SparkSpec {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(
       rows.map(r => Row.fromSeq(r.toSeq(inputSchema).map(toScala)))), micros)
       .withColumn("t", timestamp_micros(col("t"))).cache()
-    for (zone <- Seq("UTC", "America/Los_Angeles"); fmt <- formats)
-      withZone(zone) {
-        val got = df.select(columns(fmt.render): _*).collect()
-        val want = df.select(columns(Reference.render(fmt)): _*).collect()
-        assert(got.toSeq == want.toSeq, s"$zone $fmt")
-      }
+    for (zone <- Seq("UTC", "America/Los_Angeles")) withZone(zone) {
+      val got = df.select(columns(ValueFormat.render): _*).collect()
+      val want = df.select(columns(Reference.render): _*).collect()
+      assert(got.toSeq == want.toSeq, zone)
+    }
     df.unpersist()
   }
 
@@ -118,8 +114,8 @@ object StagedStringSpec {
 
   /** The formulation the renderer replaced: `date_format` and
     * `regexp_replace` per timestamp, `regexp_replace` over a string cast
-    * per double, `sanitize` around every rendering, `substring` for
-    * Redshift, and `coalesce` to the empty string. */
+    * per double, `sanitize` around every rendering, and `coalesce` to the
+    * empty string. */
   object Reference {
     def goRfc3339Micro(c: Column): Column = {
       val raw = date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
@@ -130,25 +126,13 @@ object StagedStringSpec {
     def goNumber(c: Column): Column =
       regexp_replace(c.cast(StringType), "\\.0$", "")
 
-    def render(fmt: ValueFormat)(c0: Column, f: Field): Column = {
+    def render(c0: Column, f: Field): Column = {
       val c = c0.cast(f.dataType)
       val sanitize = ValueFormat.sanitize _
-      val out = fmt match {
-        case ValueFormat.Default => f.dataType match {
-          case TimestampType => sanitize(goRfc3339Micro(c))
-          case DoubleType => sanitize(goNumber(c))
-          case _ => sanitize(c.cast(StringType))
-        }
-        case ValueFormat.Redshift(varCharMax) => f.dataType match {
-          case TimestampType =>
-            val raw = date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSSSSS")
-            val trimmed = regexp_replace(
-              regexp_replace(raw, "(\\.\\d*?)0+$", "$1"), "\\.$", "")
-            sanitize(concat(trimmed, lit(" +0000 UTC")))
-          case DoubleType => sanitize(goNumber(c))
-          case _ =>
-            substring(sanitize(c.cast(StringType)), 0, varCharMax - 1)
-        }
+      val out = f.dataType match {
+        case TimestampType => sanitize(goRfc3339Micro(c))
+        case DoubleType => sanitize(goNumber(c))
+        case _ => sanitize(c.cast(StringType))
       }
       coalesce(out, lit(""))
     }

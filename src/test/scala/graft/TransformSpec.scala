@@ -59,16 +59,6 @@ class TransformSpec extends SparkSpec {
     assert(out.columns.length == 59)
   }
 
-  test("Redshift format: Go time.String() and VarCharMax truncation") {
-    val schema = ExportSchema.reconcileWithExisting(
-      Seq("EventStart", "PageUrl"))
-    val out = ExportTransform.toStagedStrings(fixtureDf, schema,
-      ValueFormat.Redshift(varCharMax = 11))
-    val r = out.orderBy(col("EventStart")).collect()(0)
-    assert(r.getAs[String]("EventStart") == "2020-08-27 06:20:26.9 +0000 UTC")
-    assert(r.getAs[String]("PageUrl") == "https://x.") // 11 - 1 chars
-  }
-
   test("goNumber renders whole doubles without .0") {
     val s = spark
     import s.implicits._

@@ -24,9 +24,10 @@ object Bpe {
   /** Train a BPE merge table: `nMerges` (left, right) pairs in rank
     * order. Deterministic — the most frequent adjacent symbol pair wins
     * each round, ties broken by (left, right) lexicographic ascending. */
-  def train(docs: DataFrame, textCol: String, nMerges: Int,
-            vocabHead: Int = 10000): Seq[(String, String)] = {
-    require(nMerges >= 0 && vocabHead > 0)
+  def train(docs: DataFrame, textCol: String, nMerges: Int)
+      : Seq[(String, String)] = {
+    val vocabHead = 10000
+    require(nMerges >= 0)
     val wc = docs
       .select(explode_outer(TextAnalysis.tokens(col(textCol))).as("w"))
       .filter(col("w").isNotNull && col("w") =!= "")

@@ -146,9 +146,9 @@ object NaiveBayes {
     * The vocab-bounded model table IS materialized: it feeds
     * both the V count (a driver action) and the scoring join. */
   def confusionMatrix(docs: DataFrame, idCol: String, textCol: String,
-                      labelCol: String, trainHexMax: String = "c"): DataFrame =
+                      labelCol: String): DataFrame =
     confusionMatrixWithSplit(docs, idCol, textCol, labelCol,
-      isTrain(col(idCol), trainHexMax))
+      isTrain(col(idCol)))
 
   /** [[confusionMatrix]] with an arbitrary train-membership predicate —
     * the hook k-fold cross-validation plugs its fold complements into. */

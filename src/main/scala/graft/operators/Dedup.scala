@@ -81,9 +81,11 @@ object Dedup {
     * verify. No all-pairs product ever forms.
     */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
-                      k: Int = 16, bands: Int = 4, shingleN: Int = 3,
+                      bands: Int = 4,
                       threshold: Double = 0.5,
                       fast: Boolean = true): DataFrame = {
+    val k = 16
+    val shingleN = 3
     // Shingle sets and banded signatures are computed ONCE per document in
     // a single native pass (signature + banding fused — slicing a signature
     // column into bands would re-evaluate it per band); the candidate join
@@ -474,8 +476,9 @@ object Dedup {
     * [[nearDupClusters]] (pair-graph-sized, never corpus-wide), one
     * id-keyed left join attaches them, both splits are map-side
     * projections. */
-  def clusterAwareSplit(docs: DataFrame, pairs: DataFrame, idCol: String,
-                        trainHexCutoff: String = "c"): DataFrame = {
+  def clusterAwareSplit(docs: DataFrame, pairs: DataFrame,
+                        idCol: String): DataFrame = {
+    val trainHexCutoff = "c"
     // the ONE md5-bucket split rule (shared with NaiveBayes/q63), so the
     // per-doc and per-cluster assignments can never drift apart
     def splitOf(c: Column): Column =
@@ -533,8 +536,9 @@ object Dedup {
     * RECALL 1.0 — no probabilistic miss, unlike MinHash banding. Plan
     * shape matches the MinHash path: map-side signatures, equi-join on
     * (block index, block value), exact verify on candidates only. */
-  def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                          maxHamming: Int = 3): DataFrame = {
+  def simhashNearDupPairs(docs: DataFrame, idCol: String,
+                          textCol: String): DataFrame = {
+    val maxHamming = 3
     // (id, 16-char sig) is referenced three times (banding + both sides of
     // the verify re-attach); materialize it once so the md5-per-token
     // signature pass runs once over the corpus, not three times — the
@@ -586,7 +590,8 @@ object Dedup {
     * the same banded-Hamming search as SimHash text dedup — decode and
     * hashing are map-side `mapPartitions` work, the pair search shuffles
     * 8-byte signatures + ids only. */
-  def imageNearDupPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
+  def imageNearDupPairs(hashes: DataFrame): DataFrame = {
+    val maxHamming = 3
     val sig = Materializer.Local(hashes.filter(col("decoded"))
       .select(col("doc_id").as("id"), col("dhash").as("sig")))
     bandedHammingPairs(sig, maxHamming)
@@ -598,7 +603,8 @@ object Dedup {
     * envelope fingerprints go through the shared banded-Hamming search.
     * Decode + hashing are map-side; the pair search shuffles 8-byte
     * signatures + ids only, never PCM. */
-  def audioNearDupPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
+  def audioNearDupPairs(hashes: DataFrame): DataFrame = {
+    val maxHamming = 3
     val sig = Materializer.Local(hashes.filter(col("decoded"))
       .select(col("doc_id").as("id"), col("ahash").as("sig")))
     bandedHammingPairs(sig, maxHamming)
@@ -610,7 +616,8 @@ object Dedup {
     * video key-frame dHash all ride the SAME banded-Hamming search.
     * Decode + hashing are map-side; the pair search shuffles 8-byte
     * signatures + ids only, never frames. */
-  def videoNearDupPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
+  def videoNearDupPairs(hashes: DataFrame): DataFrame = {
+    val maxHamming = 3
     val sig = Materializer.Local(hashes.filter(col("decoded"))
       .select(col("doc_id").as("id"), col("vhash").as("sig")))
     bandedHammingPairs(sig, maxHamming)
@@ -626,10 +633,10 @@ object Dedup {
     * [[Multimodal.extractImageHashes]] output once
     * ([[Materializer.Persisted]] — ~24 bytes/image), hash only each
     * day's new images, append confirmed pairs and the new index rows. */
-  def bandedHammingPairsIncremental(newSig: DataFrame, sig: DataFrame,
-                                    maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3,
-      "4-block banding guarantees recall only for maxHamming <= 3")
+  def bandedHammingPairsIncremental(newSig: DataFrame,
+                                    sig: DataFrame): DataFrame = {
+    // 4-block banding guarantees recall only for maxHamming <= 3
+    val maxHamming = 3
     val fresh = Materializer.Local(newSig)
     val all = Materializer.Local(fresh.unionByName(sig))
     def banded(df: DataFrame): DataFrame = df.select(col("id"),
@@ -673,10 +680,11 @@ object Dedup {
 
   /** Embedding-cosine near-duplicate pairs above a threshold, using the
     * codegen'd cosine kernel over LSH-bucketed candidates (see
-    * [[Similarity.lshBuckets]]). */
+    * [[Similarity.lshBuckets]]) as a prefilter and the decimal-exact
+    * cosine on survivors. */
   def embeddingNearDupPairs(embs: DataFrame, idCol: String, vecCol: String,
-                            planes: Int = 12, threshold: Double = 0.95,
-                            exact: Boolean = false): DataFrame = {
+                            planes: Int = 12, threshold: Double = 0.95)
+      : DataFrame = {
     val bucketed = embs.select(col(idCol).as("id"), col(vecCol).as("vec"),
       Similarity.lshBuckets(col(vecCol), planes).as("bucket"))
     val l = bucketed.select(col("bucket"), col("id").as("a_id"), col("vec").as("a_vec"))
@@ -684,18 +692,15 @@ object Dedup {
     val pairs = l.join(r, Seq("bucket"))
       .filter(col("a_id") < col("b_id"))
     val fast = graft.functions.GraftFunctions.cosine_sim(col("a_vec"), col("b_vec"))
-    val scored =
-      if (!exact) pairs.withColumn("sim", round(fast, 6))
-      else pairs
-        // two-phase: the codegen'd double kernel prefilters (its error vs
-        // the decimal-exact kernel is <1e-11, so a 1e-4 margin around the
-        // threshold cannot lose a true pair); the oracle-bitwise exact
-        // cosine re-scores only survivors
-        .withColumn("fsim", fast)
-        .filter(col("fsim") >= threshold - 1e-4)
-        .withColumn("sim",
-          round(Similarity.cosineExact(col("a_vec"), col("b_vec")), 6))
-    scored
+    // two-phase: the codegen'd double kernel prefilters (its error vs
+    // the decimal-exact kernel is <1e-11, so a 1e-4 margin around the
+    // threshold cannot lose a true pair); the oracle-bitwise exact
+    // cosine re-scores only survivors
+    pairs
+      .withColumn("fsim", fast)
+      .filter(col("fsim") >= threshold - 1e-4)
+      .withColumn("sim",
+        round(Similarity.cosineExact(col("a_vec"), col("b_vec")), 6))
       .filter(col("sim") >= threshold)
       .select(col("a_id"), col("b_id"), col("sim"))
       .distinct()
@@ -708,7 +713,7 @@ object Dedup {
     * whose cosine against ANY eval vector clears `threshold`, with the
     * best-matching eval item attached. Eval sets are small by nature →
     * broadcast; the corpus streams once per pass with the codegen'd
-    * kernel as prefilter and (under `exact`) the decimal-exact cosine
+    * kernel as prefilter and the decimal-exact cosine
     * re-scoring survivors only (the q40/q42 two-phase pattern); the
     * verdict is two partial-combined argmax aggregates — no window, so
     * a pathological corpus item matching the whole eval set still can't
@@ -716,8 +721,7 @@ object Dedup {
     * (id, n_hits, best_eval, sim). */
   def semanticContamination(corpus: DataFrame, evalSet: DataFrame,
                             idCol: String, vecCol: String,
-                            threshold: Double,
-                            exact: Boolean = false): DataFrame = {
+                            threshold: Double): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val e = evalSet.select(col(idCol).as("e_id"), col(vecCol).as("e_vec"))
     val fast = graft.functions.GraftFunctions.cosine_sim(col("vec"),
@@ -725,13 +729,11 @@ object Dedup {
     val joined = c.join(
       Hints.boundedBroadcast(e, "eval_set_contract"),
       col("id") =!= col("e_id"))
-    val scored =
-      if (!exact) joined.withColumn("sim", round(fast, 6))
-      else joined.withColumn("fsim", fast)
-        .filter(col("fsim") >= threshold - 1e-4)
-        .withColumn("sim",
-          round(Similarity.cosineExact(col("vec"), col("e_vec")), 6))
-    val hits = scored.filter(col("sim") >= threshold)
+    val hits = joined.withColumn("fsim", fast)
+      .filter(col("fsim") >= threshold - 1e-4)
+      .withColumn("sim",
+        round(Similarity.cosineExact(col("vec"), col("e_vec")), 6))
+      .filter(col("sim") >= threshold)
     val agg1 = hits.groupBy(col("id"))
       .agg(count(lit(1)).as("n_hits"), max(col("sim")).as("sim"))
     hits.join(agg1.select(col("id"), col("sim")), Seq("id", "sim"))
@@ -755,9 +757,9 @@ object Dedup {
     * dropped vector: (id, dup_of = smallest earlier near-dup,
     * n_earlier = how many earlier near-dups it has). */
   def semanticDedupDrops(embs: DataFrame, idCol: String, vecCol: String,
-                         planes: Int = 12, threshold: Double = 0.95,
-                         exact: Boolean = false): DataFrame =
-    embeddingNearDupPairs(embs, idCol, vecCol, planes, threshold, exact)
+                         planes: Int = 12, threshold: Double = 0.95)
+      : DataFrame =
+    embeddingNearDupPairs(embs, idCol, vecCol, planes, threshold)
       .groupBy(col("b_id"))
       .agg(min(col("a_id")).as("dup_of"), count(lit(1)).as("n_earlier"))
       .select(col("b_id").as("id"), col("dup_of"), col("n_earlier"))
@@ -959,9 +961,10 @@ object Dedup {
     * through an extra pair-keyed aggregation exchange (measured 2.8×
     * on the verify stage at sf0.1, output bit-identical). */
   def weightedMinhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                           k: Int = 8, bands: Int = 4,
-                           thetaNum: Int = 2, thetaDen: Int = 5): DataFrame = {
-    require(k % bands == 0 && thetaNum >= 0 && thetaDen > 0)
+                           k: Int = 8, bands: Int = 4): DataFrame = {
+    val thetaNum = 3
+    val thetaDen = 5
+    require(k % bands == 0)
     val rpb = k / bands
     // FanOut before tokenize+explode: the map side of the tf exchange is
     // the corpus's dominant per-row cost, and a single-row-group input

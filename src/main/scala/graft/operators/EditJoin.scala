@@ -31,10 +31,10 @@ import org.apache.spark.sql.functions._
   * Returns (a_id, b_id, dist), a_id < b_id, dist <= maxDist. */
 object EditJoin {
 
-  def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
-                        maxDist: Int = 1): DataFrame = {
-    require(maxDist >= 1 && maxDist <= 4,
-      "segment blocking is practical for maxDist in [1, 4]")
+  def editDistancePairs(df: DataFrame, idCol: String,
+                        strCol: String): DataFrame = {
+    // segment blocking is practical for maxDist in [1, 4]
+    val maxDist = 1
     val K = maxDist
     // (id, str, len) pinned once: segments, probes, and both verify
     // re-attach sides all read it

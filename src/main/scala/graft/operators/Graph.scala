@@ -26,22 +26,22 @@ object Graph {
   /** PageRank over a directed edge list (src, dst) in which EVERY node has
     * out-degree >= 1 (pass a symmetrized edge set for undirected graphs —
     * that also removes dangling-node mass loss, exactly how the
-    * link-graph-as-quality-prior pipelines run it). Returns
-    * (node, rank) for every node, unnormalized (sum of ranks ≈ node
-    * count). Fixed iteration count — centrality priors want a
-    * deterministic, replayable result, not a convergence race. */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-               broadcastRanks: Boolean = false,
-               distinctEdges: Boolean = true): DataFrame = {
-    require(iters >= 1 && damping > 0 && damping < 1)
-    // distinctEdges=false skips the dedup shuffle when the caller's edge
-    // set is distinct by construction (a duplicated edge double-counts
-    // its contribution, so only skip when provably safe)
-    val e0 = edges.select(col("src"), col("dst"))
+    * link-graph-as-quality-prior pipelines run it). The edge set must
+    * already be distinct: a duplicated edge double-counts its
+    * contribution, and no dedup shuffle runs here (both query callers
+    * union the two directions of a distinct edge base whose arms cannot
+    * collide, so their edges are distinct by construction).
+    * Returns (node, rank) for every node, unnormalized (sum of ranks ≈
+    * node count), damping 0.85. Fixed iteration count — centrality
+    * priors want a deterministic, replayable result, not a convergence
+    * race. */
+  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
+    require(iters >= 1)
+    val damping = 0.85
     // materialize the edge set BEFORE it fans out to degree + join: both
     // consumers would otherwise re-run the caller's (possibly expensive)
     // edge-building plan — the q84 double-reference lesson
-    val e = Materializer.Local(if (distinctEdges) e0.distinct() else e0)
+    val e = Materializer.Local(edges.select(col("src"), col("dst")))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
     // degree is loop-invariant: attach it to the edge set ONCE, so each
     // iteration pays one equi-join instead of two (at 100 TB the edge
@@ -56,17 +56,15 @@ object Graph {
     val nodes = Materializer.Local(
       ed.select(col("src").as("node")).distinct())
     var ranks = nodes.withColumn("r", lit(1.0))
-    // broadcastRanks: when the node set is dimension-scale (an entity
-    // graph — customers x suppliers, domains x hosts) the rank table
-    // broadcasts and the EDGE TABLE NEVER SHUFFLES: contributions
-    // partial-combine map-side on top of the edge scan, so each iteration
-    // moves only (node, partial-sum) rows. For corpus-scale node sets
-    // (document graphs) leave it false — ranks shuffle-join instead.
-    def rankSide(df: DataFrame) = if (broadcastRanks) broadcast(df) else df
+    // the rank table broadcasts and the EDGE TABLE NEVER SHUFFLES: the
+    // node set is dimension-scale (an entity graph — customers x
+    // suppliers, domains x hosts), so contributions partial-combine
+    // map-side on top of the edge scan and each iteration moves only
+    // (node, partial-sum) rows
     var i = 0
     while (i < iters) {
       val contribs = ed
-        .join(rankSide(ranks.withColumnRenamed("node", "src")), Seq("src"))
+        .join(broadcast(ranks.withColumnRenamed("node", "src")), Seq("src"))
         .select(col("dst").as("node"),
           (col("r") / col("d")).cast("decimal(38,20)").as("contrib"))
         .groupBy(col("node"))
@@ -282,20 +280,19 @@ object Graph {
     * 2002): teleport mass flows ONLY to the seed set, so rank measures
     * proximity to the seeds rather than global centrality — the
     * related-entity / recommendation score read off co-occurrence
-    * graphs. Same contract as [[pageRank]]: symmetrized input with
-    * out-degree >= 1 everywhere, fixed iterations, unnormalized ranks
-    * (seeds init 1, others 0; teleport `1 − damping` per seed);
+    * graphs. Same contract as [[pageRank]]: distinct symmetrized input
+    * with out-degree >= 1 everywhere, fixed iterations, unnormalized
+    * ranks (seeds init 1, others 0; teleport `1 − damping` per seed,
+    * damping 0.85);
     * identical numeric-portability discipline (per-edge double
     * division, DECIMAL(38,20) accumulation, round(., 12) per
     * iteration) so the oracle's unrolled replay lands on the same
     * bits. Returns (node, rank) for every node. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-                           iters: Int, damping: Double = 0.85,
-                           broadcastRanks: Boolean = false,
-                           distinctEdges: Boolean = true): DataFrame = {
-    require(iters >= 1 && damping > 0 && damping < 1)
-    val e0 = edges.select(col("src"), col("dst"))
-    val e = Materializer.Local(if (distinctEdges) e0.distinct() else e0)
+                           iters: Int): DataFrame = {
+    require(iters >= 1)
+    val damping = 0.85
+    val e = Materializer.Local(edges.select(col("src"), col("dst")))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
     val ed = Materializer.Local(e.join(deg, Seq("src")))
     // node table with the seed indicator attached once (loop-invariant)
@@ -306,13 +303,11 @@ object Graph {
     var ranks: DataFrame =
       nodes.select(col("node"), col("seed").cast("double").as("r"))
     // entity graphs (dimension-scale node sets): broadcast the rank
-    // table each round so the EDGE TABLE NEVER SHUFFLES — the q107
-    // trade, identical values either way
-    def rankSide(df: DataFrame) = if (broadcastRanks) broadcast(df) else df
+    // table each round so the EDGE TABLE NEVER SHUFFLES — the q107 trade
     var i = 0
     while (i < iters) {
       val contribs = ed
-        .join(rankSide(ranks.withColumnRenamed("node", "src")),
+        .join(broadcast(ranks.withColumnRenamed("node", "src")),
           Seq("src"))
         .select(col("dst").as("node"),
           (col("r") / col("d")).cast("decimal(38,20)").as("contrib"))
@@ -348,8 +343,8 @@ object Graph {
     * (not a frontier delta) keeps each round idempotent and
     * oracle-replayable; with min-combine the re-derived closer labels
     * collapse for free. */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-              broadcastDist: Boolean = false): DataFrame = {
+  def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int)
+      : DataFrame = {
     require(maxHops >= 1)
     val e0 = edges.select(col("src"), col("dst"))
     val sym = Materializer.Local(
@@ -358,12 +353,11 @@ object Graph {
     var dist = Materializer.Local(seeds.select(col("node")).distinct()
       .withColumn("hops", lit(0)))
     // entity graphs: broadcast the (node, hops) table so the edge set
-    // never shuffles in the expansion join — identical values
-    def distSide(df: DataFrame) = if (broadcastDist) broadcast(df) else df
+    // never shuffles in the expansion join
     var i = 0
     while (i < maxHops) {
       val frontier = sym
-        .join(distSide(dist.withColumnRenamed("node", "src")), Seq("src"))
+        .join(broadcast(dist.withColumnRenamed("node", "src")), Seq("src"))
         .select(col("dst").as("node"), (col("hops") + lit(1)).as("hops"))
       dist = Materializer.Local(dist.unionAll(frontier)
         .groupBy(col("node")).agg(min(col("hops")).as("hops")))
@@ -384,8 +378,8 @@ object Graph {
     *
     * Scale shape: per round ONE edge-keyed equi-join + one
     * partial-combined min (the bfsHops/pageRank shuffle discipline),
-    * lineage cut per round; `broadcastDist` keeps the edge set
-    * un-shuffled for dimension-scale distance tables. A fixed `rounds`
+    * lineage cut per round; the distance table broadcasts, so the edge
+    * set never shuffles (dimension-scale node sets). A fixed `rounds`
     * makes the run replayable (the kCore contract) — rounds = k bounds
     * path length, the usual operational semantics ("within 3 links"). */
   /** Per-node neighborhood function — exact 1-ball and 2-ball sizes
@@ -402,8 +396,9 @@ object Graph {
     * distinct here exists for the correctness gate (the q126 contract:
     * estimates are engine-specific, so the hash-checked columns are the
     * exact counts + a boolean pinning the estimate within
-    * 3·rsd(lgK)). Returns (node, n1, n2, within_tol). */
-  def neighborhoodFunction(edges: DataFrame, lgK: Int = 12): DataFrame = {
+    * 3·rsd(lgK), lgK = 12). Returns (node, n1, n2, within_tol). */
+  def neighborhoodFunction(edges: DataFrame): DataFrame = {
+    val lgK = 12
     val e0 = edges.select(col("src"), col("dst"))
     val sym = Materializer.Local(
       e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
@@ -440,8 +435,7 @@ object Graph {
   }
 
   def weightedShortestPaths(edges: DataFrame, seeds: DataFrame,
-                            rounds: Int, broadcastDist: Boolean = false)
-      : DataFrame = {
+                            rounds: Int): DataFrame = {
     require(rounds >= 1)
     val e0 = edges.select(col("src"), col("dst"), col("cost").cast("long"))
     val sym = Materializer.Local(
@@ -451,11 +445,10 @@ object Graph {
         .groupBy(col("src"), col("dst")).agg(min(col("cost")).as("cost")))
     var dist = Materializer.Local(seeds.select(col("node")).distinct()
       .withColumn("cost", lit(0L)))
-    def distSide(df: DataFrame) = if (broadcastDist) broadcast(df) else df
     var i = 0
     while (i < rounds) {
       val frontier = sym
-        .join(distSide(dist.select(col("node").as("src"),
+        .join(broadcast(dist.select(col("node").as("src"),
           col("cost").as("dc"))), Seq("src"))
         .select(col("dst").as("node"), (col("dc") + col("cost")).as("cost"))
       dist = Materializer.Local(dist.unionAll(frontier)
@@ -578,14 +571,12 @@ object Graph {
     * flip a bit), one scalar L1 norm broadcast back, scores
     * re-quantized round(12) — the [[pageRank]] bit-pinning contract,
     * so an unrolled SQL replay lands on identical bits by induction.
-    * `broadcastRanks`: score tables are node-scale (dimension-scale on
-    * entity graphs even at 100 TB) and broadcast; the edge table never
-    * shuffles. Returns (node, score, role∈{hub,authority}); every src
-    * gets a hub score, every dst an authority score. */
-  def hits(edges: DataFrame, iters: Int,
-           broadcastRanks: Boolean = true): DataFrame = {
+    * Score tables are node-scale (dimension-scale on entity graphs even
+    * at 100 TB) and broadcast; the edge table never shuffles. Returns
+    * (node, score, role∈{hub,authority}); every src gets a hub score,
+    * every dst an authority score. */
+  def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
-    def side(df: DataFrame) = if (broadcastRanks) broadcast(df) else df
     val e = Materializer.Local(edges.select(col("src"), col("dst")))
     var hubs = e.select(col("src").as("node")).distinct()
       .withColumn("h", lit(1.0))
@@ -597,7 +588,7 @@ object Graph {
       // re-executions of the whole chain (measured: q248 at 87 s for a
       // sub-second workload before this cut)
       val araw = Materializer.Local(
-        e.join(side(hubs), col("src") === col("node"))
+        e.join(broadcast(hubs), col("src") === col("node"))
           .groupBy(col("dst"))
           .agg(sum(col("h").cast("decimal(38,20)")).as("c")))
       val an = araw.agg(sum(col("c")).as("s"))
@@ -606,7 +597,7 @@ object Graph {
           round(col("c").cast("double") / col("s").cast("double"), 12)
             .as("a"))
       val hraw = Materializer.Local(
-        e.join(side(auths), col("dst") === col("node"))
+        e.join(broadcast(auths), col("dst") === col("node"))
           .groupBy(col("src"))
           .agg(sum(col("a").cast("decimal(38,20)")).as("c")))
       val hn = hraw.agg(sum(col("c")).as("s"))

@@ -52,8 +52,10 @@ object Retrieval {
     * in DECIMAL(38,6) so partial-agg order can never flip a bit; the
     * final top-N is a bounded TakeOrdered, not a window. */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
-           queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
+           queryTerms: Seq[String],
            topN: Int = 10): DataFrame = {
+    val k1 = 1.2
+    val b = 0.75
     require(queryTerms.nonEmpty && topN > 0)
     val toks = TextAnalysis.tokens(col(textCol))
     // one corpus pass: doc length for every doc (zero-token docs count
@@ -99,27 +101,26 @@ object Retrieval {
     * decimal-sum requantization; sums are order-independent). The
     * per-label rank is a label-partitioned window — the one place the
     * batch pays more than the single query's TakeOrdered; a bounded
-    * per-group heap is the drop-in at extreme corpus sizes. */
-  def bm25Batch(docs: DataFrame, idCol: String, textCol: String,
-                queries: Seq[(String, Seq[String])], k1: Double = 1.2,
-                b: Double = 0.75, topN: Int = 10,
-                postings: Option[DataFrame] = None): DataFrame = {
-    require(queries.nonEmpty && queries.forall(_._2.nonEmpty) && topN > 0)
-    val allTerms = queries.flatMap(_._2).distinct
-    // `postings` (when given) must be [[trimmedPostings]] over the same
-    // docs and the union of these queries' terms — the caller-shared
-    // one-tokenize path
-    val dl = postings.getOrElse(
-      trimmedPostings(docs, idCol, textCol, allTerms))
-    val stats = dl.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
+    * per-group heap is the drop-in at extreme corpus sizes.
+    *
+    * `postings` is [[trimmedPostings]] over the corpus and the union of
+    * these queries' terms — the caller-shared one-tokenize path. Top 10
+    * per label, k1 = 1.2, b = 0.75. */
+  def bm25Batch(postings: DataFrame, queries: Seq[(String, Seq[String])])
+      : DataFrame = {
+    val k1 = 1.2
+    val b = 0.75
+    val topN = 10
+    require(queries.nonEmpty && queries.forall(_._2.nonEmpty))
+    val stats = postings.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).cast("double").as("n_docs"),
         (sum(col("dl")).cast("double") / count(lit(1)).cast("double"))
           .as("avgdl"))
-    val tf = dl.filter(col("t").isNotNull)
+    val tf = postings.filter(col("t").isNotNull)
       .groupBy(col("doc_id"), col("dl"), col("t"))
       .agg(count(lit(1)).cast("double").as("tf"))
     val df = tf.groupBy(col("t")).agg(count(lit(1)).cast("double").as("df"))
-    val sp0 = docs.sparkSession
+    val sp0 = postings.sparkSession
     import sp0.implicits._
     val lbl = queries.flatMap { case (q, ts) => ts.map(t => (q, t)) }
       .toDF("q", "t")
@@ -155,12 +156,11 @@ object Retrieval {
     * single-query path's empty aggregate). */
   def queryLikelihoodBatch(docs: DataFrame, idCol: String,
                            textCol: String,
-                           queries: Seq[(String, Seq[String])],
-                           mu: Double = 100.0, topN: Int = 20,
+                           queries: Seq[(String, Seq[String])], topN: Int = 20,
                            postings: Option[DataFrame] = None)
       : DataFrame = {
-    require(queries.nonEmpty && queries.forall(_._2.nonEmpty) &&
-      topN > 0 && mu > 0)
+    val mu = 100.0
+    require(queries.nonEmpty && queries.forall(_._2.nonEmpty) && topN > 0)
     val allTerms = queries.flatMap(_._2).distinct
     // caller-shared one-tokenize path — see [[bm25Batch]]
     val dl = postings.getOrElse(
@@ -473,8 +473,9 @@ object Retrieval {
       .filter(col("containment") >= threshold)
   }
 
-  def rrfFuse(rankings: Seq[DataFrame], c: Int = 60, topN: Int = 10)
+  def rrfFuse(rankings: Seq[DataFrame], topN: Int = 10)
       : DataFrame = {
+    val c = 60
     require(rankings.nonEmpty && topN > 0)
     val all = rankings.map(_.select(col("doc_id"),
       (lit(1.0) / (lit(c.toDouble) + col("rk").cast("double"))).as("s")))

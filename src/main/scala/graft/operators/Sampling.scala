@@ -111,7 +111,8 @@ object Sampling {
     * `target` must be a subset of `df` rows (same id space). Returns
     * (rk, id, logw, score) for the selected docs. */
   def dsirResample(df: DataFrame, target: DataFrame, idCol: String,
-                   textCol: String, n: Int, alpha: Double = 0.5): DataFrame = {
+                   textCol: String, n: Int): DataFrame = {
+    val alpha = 0.5
     require(n > 0)
     val tf = Materializer.Local(df
       .select(col(idCol).as("id"),
@@ -333,11 +334,9 @@ object Sampling {
     * rides a broadcast literal cross. The global window is over
     * |sources| rows, never the corpus. */
   def temperatureMixture(docs: DataFrame, groupCol: String,
-                         tokens: Column, sqrtLevels: Seq[Int] = Seq(0, 1, 2))
+                         tokens: Column)
       : DataFrame = {
-    require(sqrtLevels.nonEmpty &&
-      sqrtLevels.forall(k => k >= 0 && k <= 6) &&
-      sqrtLevels.distinct.size == sqrtLevels.size)
+    val sqrtLevels = Seq(0, 1, 2)
     val spark = docs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -455,10 +454,11 @@ object Sampling {
     * bit-identical. Returns one row per greedy round:
     * (rk, doc_id, gain, objective). */
   def facilityLocationSelect(docs: DataFrame, idCol: String,
-                             textCol: String, nCand: Int = 30, k: Int = 5,
-                             shingleN: Int = 3): DataFrame = {
+                             textCol: String, nCand: Int = 30,
+                             k: Int = 5): DataFrame = {
+    val shingleN = 3
     import org.apache.spark.sql.expressions.Window
-    require(nCand >= 1 && k >= 1 && shingleN >= 1)
+    require(nCand >= 1 && k >= 1)
     val zero = lit(0).cast("decimal(19,9)")
     val sh = docs.select(col(idCol).as("did"),
       explode(array_distinct(
@@ -537,9 +537,11 @@ object Sampling {
     * stage_budget, sampling_rate, epochs, capped_tokens,
     * achievable_share) ordered by stage. */
   def curriculumPlan(docs: DataFrame, tier: Column, tokens: Column,
-                     budget: Long, nTiers: Int = 4, maxEpochs: Int = 4)
+                     budget: Long)
       : DataFrame = {
-    require(budget > 0 && nTiers >= 1 && maxEpochs >= 1)
+    val nTiers = 4
+    val maxEpochs = 4
+    require(budget > 0)
     val spark = docs.sparkSession
     import spark.implicits._
     val perTier = docs

@@ -16,12 +16,13 @@ import org.apache.spark.sql.functions._
 object Sessionize {
 
   /** Assign gap-based session ids per user: a new session starts when the
-    * gap to the previous event exceeds `gapSeconds`. Returns the input plus
+    * gap to the previous event exceeds `gapSeconds`; events at the same
+    * timestamp are ordered by `event_id`. Returns the input plus
     * `session_seq` (1-based per-user session index). */
   def withSessionIds(events: DataFrame, userCol: String, tsCol: String,
-                     gapSeconds: Long, tieCols: Seq[String] = Nil): DataFrame = {
+                     gapSeconds: Long): DataFrame = {
     val byUser = Window.partitionBy(col(userCol))
-      .orderBy(col(tsCol) +: tieCols.map(col): _*)
+      .orderBy(col(tsCol), col("event_id"))
     val prev = lag(col(tsCol), 1).over(byUser)
     val isNew = when(prev.isNull, lit(1L)).otherwise(
       when(unix_micros(col(tsCol)) - unix_micros(prev) > gapSeconds * 1000000L,
@@ -33,9 +34,8 @@ object Sessionize {
   /** Per-session summary: bounds, event count, exact value sum (decimal
     * accumulation -> order-independent, oracle-safe). */
   def sessionSummary(events: DataFrame, userCol: String, tsCol: String,
-                     valueCol: String, gapSeconds: Long,
-                     tieCols: Seq[String] = Nil): DataFrame =
-    withSessionIds(events, userCol, tsCol, gapSeconds, tieCols)
+                     valueCol: String, gapSeconds: Long): DataFrame =
+    withSessionIds(events, userCol, tsCol, gapSeconds)
       .groupBy(col(userCol), col("session_seq"))
       .agg(
         min(col(tsCol)).as("session_start"),

@@ -81,10 +81,10 @@ object Similarity {
     * it is broadcast; the corpus is streamed once with no shuffle before
     * the final per-query top-k. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
                      exact: Boolean = false,
                      fanOutCorpus: Boolean = false): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+    val q = queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("q_vec"))
     // fanOutCorpus: the |Q| x |corpus| scoring loop runs in the corpus
     // scan stage (the queries ride a broadcast), so a single-row-group
     // input scores on ONE task. Callers whose query set is CORPUS-SCALE
@@ -92,8 +92,8 @@ object Similarity {
     // in; for fixed small query panels the exchange is pure overhead
     // (q40/q72/q228 measured +0.4-0.7 s each with it always-on) and at
     // production partitioning the guard no-ops either way.
-    val c0 = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("c_vec"))
+    val c0 = corpus.select(col("vec_id").as("neighbor_id"),
+      col("embedding").as("c_vec"))
     val c = if (fanOutCorpus) FanOut(c0) else c0
     if (!exact) {
       // one corpus pass; the partial top-k aggregate bounds the shuffle to
@@ -166,53 +166,41 @@ object Similarity {
   }
 
   /** Hard-negative mining for contrastive / embedding training: for each
-    * query vector, the k nearest corpus vectors whose `labelCol` DIFFERS
+    * query vector, the k nearest corpus vectors whose `label` DIFFERS
     * from the query's (the "hard negatives" — close in embedding space,
     * wrong class). Same scale shape as [[bruteForceTopK]]: queries
     * broadcast, corpus streamed once, the label-mismatch predicate rides
     * the broadcast join (map-side — mismatching pairs never materialize),
     * and the bounded [[graft.functions.TopKAgg]] heap caps the shuffle at
-    * ≤k rows per (partition, query). `exact = true` re-scores the
-    * candidate margin with the decimal-exact cosine (oracle-bitwise). */
-  def hardNegativesTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding",
-                        labelCol: String = "label",
-                        exact: Boolean = false): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      col(labelCol).as("q_label"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-      col(labelCol).as("c_label"))
+    * ≤k rows per (partition, query). The candidate margin is re-scored
+    * with the decimal-exact cosine (oracle-bitwise). Reads `vec_id`,
+    * `embedding` and `label`. */
+  def hardNegativesTopK(corpus: DataFrame, queries: DataFrame, k: Int)
+      : DataFrame = {
+    val q = queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("q_vec"), col("label").as("q_label"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"),
+      col("embedding").as("c_vec"), col("label").as("c_label"))
     val joinCond = col("query_id") =!= col("neighbor_id") &&
       !(col("q_label") <=> col("c_label"))
-    if (!exact) {
-      val scored = c.join(
-        Hints.boundedBroadcast(q, "query_set_contract"), joinCond)
-        .withColumn("sim",
-          round(GraftFunctions.cosine_sim(col("q_vec"), col("c_vec")), 6))
-      partialTopK(scored, col("sim"), k)
-        .select(col("query_id"), col("neighbor_id"),
-          col("hsim").as("sim"), col("hrk").as("rk"))
-    } else {
-      // two-phase exact (see bruteForceTopK): fast-kernel heap with a
-      // candidate margin, decimal-exact re-score on survivors only
-      val margin = k + 15
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("neighbor_id").asc)
-      val scored = c.join(
-        Hints.boundedBroadcast(q, "query_set_contract"), joinCond)
-        .withColumn("fsim", GraftFunctions.cosine_sim(col("q_vec"), col("c_vec")))
-      c.join(Hints.boundedBroadcast(
-          partialTopK(scored, col("fsim"), margin), "topk_capped"),
-          Seq("neighbor_id"))
-        .join(Hints.boundedBroadcast(q, "query_set_contract"),
-          Seq("query_id"))
-        .withColumn("sim", round(cosineExact(col("q_vec"), col("c_vec")), 6))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("sim"),
-          col("rk").cast("int").as("rk"))
-    }
+    // two-phase exact (see bruteForceTopK): fast-kernel heap with a
+    // candidate margin, decimal-exact re-score on survivors only
+    val margin = k + 15
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("neighbor_id").asc)
+    val scored = c.join(
+      Hints.boundedBroadcast(q, "query_set_contract"), joinCond)
+      .withColumn("fsim", GraftFunctions.cosine_sim(col("q_vec"), col("c_vec")))
+    c.join(Hints.boundedBroadcast(
+        partialTopK(scored, col("fsim"), margin), "topk_capped"),
+        Seq("neighbor_id"))
+      .join(Hints.boundedBroadcast(q, "query_set_contract"),
+        Seq("query_id"))
+      .withColumn("sim", round(cosineExact(col("q_vec"), col("c_vec")), 6))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("sim"),
+        col("rk").cast("int").as("rk"))
   }
 
   /** Symmetric per-vector int8 quantization: scale = max|x| / 127,
@@ -293,22 +281,21 @@ object Similarity {
     * per-cell sum buffers do), and collecting the k centroids per round
     * cuts lineage by construction (no checkpoint primitive needed: the k ×
     * dim model is driver-resident between rounds, as Lloyd's requires). */
-  def trainIvfCentroids(emb: DataFrame, k: Int, iters: Int,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
+  def trainIvfCentroids(emb: DataFrame, k: Int, iters: Int): DataFrame = {
     val vecAvg = org.apache.spark.sql.functions.udaf(graft.functions.VectorAvg)
     var centroids = emb
-      .orderBy(md5(col(idCol).cast("string")).asc, col(idCol).asc)
+      .orderBy(md5(col("vec_id").cast("string")).asc, col("vec_id").asc)
       .limit(k)
-      .select(col(idCol).cast("long").as("cell_id"), col(vecCol).as("c_vec"))
+      .select(col("vec_id").cast("long").as("cell_id"),
+          col("embedding").as("c_vec"))
     for (_ <- 1 to iters) {
       val centLit = centroidLiteral(centroids, "cell_id", "c_vec")
       centroids = emb
-        .select(col(vecCol),
-          element_at(GraftFunctions.nearest_cells(col(vecCol), centLit,
+        .select(col("embedding"),
+          element_at(GraftFunctions.nearest_cells(col("embedding"), centLit,
             probes = 1, exact = false), 1).as("cell_id"))
         .groupBy(col("cell_id"))
-        .agg(vecAvg(col(vecCol)).as("c_vec"))
+        .agg(vecAvg(col("embedding")).as("c_vec"))
     }
     centroids
   }
@@ -319,13 +306,13 @@ object Similarity {
     * (query, neighbor) pair occurs at most once and index size is
     * unchanged — nprobe trades candidate reads for recall). Seeds are
     * broadcast, assignment is map-side, and the candidate join is an
-    * equi-join on cell id — per-query work is nprobe cell populations. */
+    * equi-join on cell id — per-query work is nprobe cell populations.
+    * Cell assignment and the final ranking are decimal-exact
+    * (oracle-bitwise). Reads `vec_id` and `embedding`. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, seeds: DataFrame,
-              k: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              exact: Boolean = false, nprobe: Int = 1): DataFrame = {
+              k: Int, nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    val centLit = centroidLiteral(seeds, idCol, vecCol)
+    val centLit = centroidLiteral(seeds, "vec_id", "embedding")
     // Map-side assignment ([[graft.functions.NearestCells]]): the two-phase
     // exact semantics (fast-kernel top probes+1, decimal-exact re-rank) run
     // inside the expression, so assignment is a projection — no corpus×k
@@ -333,9 +320,9 @@ object Similarity {
     // cell equi-join untouched.
     def assign(df: DataFrame, id: String, vec: String,
                probes: Int): DataFrame = {
-      val base = df.select(col(idCol).as(id), col(vecCol).as(vec))
+      val base = df.select(col("vec_id").as(id), col("embedding").as(vec))
       val cells =
-        GraftFunctions.nearest_cells(col(vec), centLit, probes, exact)
+        GraftFunctions.nearest_cells(col(vec), centLit, probes, exact = true)
       if (probes == 1)
         base.select(col(id), col(vec), element_at(cells, 1).as("cell_id"))
       else
@@ -348,32 +335,25 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("fsim",
         GraftFunctions.cosine_sim(col("q_vec"), col("c_vec")))
-    if (!exact)
-      partialTopK(candidates.withColumn("sim", round(col("fsim"), 6)),
-          col("sim"), k)
-        .select(col("query_id"), col("neighbor_id"),
-          col("hsim").as("sim"), col("hrk").as("rk"))
-    else {
-      // bounded heap on the fast kernel, exact re-score of survivors only;
-      // survivor vectors re-attach via broadcast joins of the candidate
-      // set against the RAW corpus (re-deriving `c` would re-run the whole
-      // cell-assignment subtree a second time)
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("neighbor_id").asc)
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-        .join(Hints.boundedBroadcast(
-          partialTopK(candidates, col("fsim"), k + 15), "topk_capped"),
-          Seq("neighbor_id"))
-        // one row per query even under nprobe > 1 probed cells
-        .join(Hints.boundedBroadcast(q.select(col("query_id"), col("q_vec"))
-          .dropDuplicates("query_id"), "query_set_contract"),
-          Seq("query_id"))
-        .withColumn("sim", round(cosineExact(col("q_vec"), col("c_vec")), 6))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("sim"),
-          col("rk").cast("int").as("rk"))
-    }
+    // bounded heap on the fast kernel, exact re-score of survivors only;
+    // survivor vectors re-attach via broadcast joins of the candidate
+    // set against the RAW corpus (re-deriving `c` would re-run the whole
+    // cell-assignment subtree a second time)
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("neighbor_id").asc)
+    corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
+      .join(Hints.boundedBroadcast(
+        partialTopK(candidates, col("fsim"), k + 15), "topk_capped"),
+        Seq("neighbor_id"))
+      // one row per query even under nprobe > 1 probed cells
+      .join(Hints.boundedBroadcast(q.select(col("query_id"), col("q_vec"))
+        .dropDuplicates("query_id"), "query_set_contract"),
+        Seq("query_id"))
+      .withColumn("sim", round(cosineExact(col("q_vec"), col("c_vec")), 6))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("sim"),
+        col("rk").cast("int").as("rk"))
   }
 
   /** Product-quantization codebooks: the embedding dimension is split into
@@ -385,17 +365,16 @@ object Similarity {
     * centroid model, and small enough to serialize into any plan as a
     * literal. Returns codebooks(j)(c) = centroid c of subspace j, densely
     * renumbered 0..ksub-1 (Lloyd cells that lose every member drop out). */
-  def trainPqCodebooks(emb: DataFrame, m: Int, ksub: Int, iters: Int,
-                       idCol: String = "vec_id", vecCol: String = "embedding")
+  def trainPqCodebooks(emb: DataFrame, m: Int, ksub: Int, iters: Int)
       : Array[Array[Array[Float]]] = {
-    val dim = emb.select(size(col(vecCol))).first().getInt(0)
+    val dim = emb.select(size(col("embedding"))).first().getInt(0)
     require(m > 0 && dim % m == 0, s"dim $dim must split into m=$m subspaces")
     val sub = dim / m
     (0 until m).toArray.map { j =>
       trainIvfCentroids(
-          emb.select(col(idCol),
-            slice(col(vecCol), j * sub + 1, sub).as(vecCol)),
-          ksub, iters, idCol, vecCol)
+          emb.select(col("vec_id"),
+            slice(col("embedding"), j * sub + 1, sub).as("embedding")),
+          ksub, iters)
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
         .sortBy(_._1).map(_._2)
@@ -457,8 +436,7 @@ object Similarity {
       v.map(x => x.toDouble * x.toDouble).sum).toSeq).toSeq)
 
   def pqTopK(corpus: DataFrame, queries: DataFrame,
-             codebooks: Array[Array[Array[Float]]], k: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding")
+             codebooks: Array[Array[Array[Float]]], k: Int)
       : DataFrame = {
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "empty PQ codebook")
@@ -470,13 +448,13 @@ object Similarity {
     // the operating mode: a pipeline encodes once, persists the index
     // (`Materializer.Persisted`), and every search scans codes only.
     val c = Materializer.Local(corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
       .select(col("neighbor_id"),
         pqCodesCol(col("c_vec"), codebooks).as("codes")))
     val nsqLit = pqNsqLit(codebooks)
     val (lutsCol, qnormCol) = pqQuerySide(col("q_vec"), codebooks)
     val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
       .withColumn("luts", lutsCol)
       .withColumn("qnorm", qnormCol)
       .select(col("query_id"), col("luts"), col("qnorm"))
@@ -507,14 +485,13 @@ object Similarity {
     * native one-pass ADC kernel against its lookup tables. Recall knobs:
     * nprobe (coarse) × codebook size (fine). */
   def ivfPqIndex(corpus: DataFrame, seeds: DataFrame,
-                 codebooks: Array[Array[Array[Float]]],
-                 idCol: String = "vec_id", vecCol: String = "embedding")
+                 codebooks: Array[Array[Array[Float]]])
       : DataFrame = {
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "empty PQ codebook")
-    val centLit = centroidLiteral(seeds, idCol, vecCol)
+    val centLit = centroidLiteral(seeds, "vec_id", "embedding")
     corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
       .select(col("neighbor_id"),
         element_at(GraftFunctions.nearest_cells(col("c_vec"), centLit,
           probes = 1, exact = false), 1).as("cell_id"),
@@ -528,16 +505,15 @@ object Similarity {
     * code words, never the corpus. */
   def ivfPqSearch(index: DataFrame, queries: DataFrame, seeds: DataFrame,
                   codebooks: Array[Array[Array[Float]]], k: Int,
-                  nprobe: Int = 1,
-                  idCol: String = "vec_id", vecCol: String = "embedding")
+                  nprobe: Int = 1)
       : DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "empty PQ codebook")
-    val centLit = centroidLiteral(seeds, idCol, vecCol)
+    val centLit = centroidLiteral(seeds, "vec_id", "embedding")
     val (lutsCol, qnormCol) = pqQuerySide(col("q_vec"), codebooks)
     val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
       .withColumn("luts", lutsCol)
       .withColumn("qnorm", qnormCol)
       .select(col("query_id"), col("luts"), col("qnorm"),
@@ -552,15 +528,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         round(col("hsim"), 6).as("sim"), col("hrk").as("rk"))
   }
-
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, seeds: DataFrame,
-                codebooks: Array[Array[Array[Float]]], k: Int,
-                nprobe: Int = 1,
-                idCol: String = "vec_id", vecCol: String = "embedding")
-      : DataFrame =
-    ivfPqSearch(
-      Materializer.Local(ivfPqIndex(corpus, seeds, codebooks, idCol, vecCol)),
-      queries, seeds, codebooks, k, nprobe, idCol, vecCol)
 
   /** Reference HOF formulation of the ADC cosine (executable spec of
     * [[graft.functions.AdcCosine]]'s semantics, pinned by a differential
@@ -588,14 +555,15 @@ object Similarity {
     * the other side of one hyperplane). Probing multiplies per-query
     * candidate reads by ~(planes+1) but leaves the corpus single-bucketed,
     * so index size is unchanged and a (query, neighbor) pair still occurs
-    * at most once — recall rises without any dedup step. */
+    * at most once — recall rises without any dedup step. 8 hyperplanes;
+    * reads `vec_id` and `embedding`. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              planes: Int = 10,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              exact: Boolean = false, probeBits: Int = 0): DataFrame = {
+              probeBits: Int = 0): DataFrame = {
+    val planes = 8
     require(probeBits >= 0 && probeBits <= 1, "probeBits must be 0 or 1")
-    val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      lshBuckets(col(vecCol), planes).as("bucket0"))
+    val q0 = queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("q_vec"),
+      lshBuckets(col("embedding"), planes).as("bucket0"))
     val q =
       if (probeBits == 0)
         q0.select(col("query_id"), col("q_vec"),
@@ -608,14 +576,13 @@ object Similarity {
               col("bucket0").bitwiseXOR(cf("shiftleft", lit(1L), i)))))
             .as("bucket"))
       }
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-      lshBuckets(col(vecCol), planes).as("bucket"))
-    val simCol = if (exact) cosineExact(col("q_vec"), col("c_vec"))
-                 else GraftFunctions.cosine_sim(col("q_vec"), col("c_vec"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"),
+      col("embedding").as("c_vec"),
+      lshBuckets(col("embedding"), planes).as("bucket"))
     val scored = c.join(
       Hints.boundedBroadcast(q, "query_set_contract"), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(simCol, 6))
+      .withColumn("sim", round(cosineExact(col("q_vec"), col("c_vec")), 6))
     partialTopK(scored, col("sim"), k)
       .select(col("query_id"), col("neighbor_id"),
         col("hsim").as("sim"), col("hrk").as("rk"))
@@ -806,8 +773,9 @@ object Similarity {
     * round(12) normalization term for term, so the oracle's full-matrix
     * replay still matches bit for bit (measured 8.6 -> ~2.8 s at
     * sf0.1). */
-  def pcaTopComponent(emb: DataFrame, idCol: String, vecCol: String,
-                      iters: Int = 5): DataFrame = {
+  def pcaTopComponent(emb: DataFrame, idCol: String,
+                      vecCol: String): DataFrame = {
+    val iters = 5
     val spark = emb.sparkSession
     val mo = emb.select(col(vecCol).cast("array<float>"))
       .as[Array[Float]](org.apache.spark.sql.catalyst.encoders
@@ -984,13 +952,12 @@ object Similarity {
     * this is the faithful full-join variant with small k. Returns the
     * final directed edge list (v, u, sim, rk). */
   def nnDescentGraph(emb: DataFrame, k: Int = 10, rounds: Int = 3,
-                     spaces: Int = 3, bucketTarget: Int = 16,
-                     margin: Int = 15, idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    require(k >= 1 && rounds >= 0 && spaces >= 1 && bucketTarget >= 1 &&
-      margin >= 0)
+                     bucketTarget: Int = 16): DataFrame = {
+    val spaces = 3
+    val margin = 15
+    require(k >= 1 && rounds >= 0 && bucketTarget >= 1)
     val pts = Materializer.Local(
-      emb.select(col(idCol).as("pid"), col(vecCol).as("pvec")))
+      emb.select(col("vec_id").as("pid"), col("embedding").as("pvec")))
     // bucket count — a corpus-size scalar, shared with the oracle's
     // ceil(count/target) subquery
     val b = math.max(1L,
@@ -1058,15 +1025,15 @@ object Similarity {
     * and edges are read, never re-signatured. Ids of `newEmb` must be
     * disjoint from the base. Returns (v, u, sim, rk) for new v only. */
   def nnGraphInsert(baseGraph: DataFrame, baseEmb: DataFrame,
-                    newEmb: DataFrame, k: Int = 10, spaces: Int = 3,
-                    bucketTarget: Int = 16, margin: Int = 15,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    require(k >= 1 && spaces >= 1 && bucketTarget >= 1 && margin >= 0)
+                    newEmb: DataFrame, k: Int = 10): DataFrame = {
+    val spaces = 3
+    val bucketTarget = 16
+    val margin = 15
+    require(k >= 1)
     val bpts = Materializer.Local(
-      baseEmb.select(col(idCol).as("pid"), col(vecCol).as("pvec")))
+      baseEmb.select(col("vec_id").as("pid"), col("embedding").as("pvec")))
     val npts = Materializer.Local(
-      newEmb.select(col(idCol).as("pid"), col(vecCol).as("pvec")))
+      newEmb.select(col("vec_id").as("pid"), col("embedding").as("pvec")))
     // bucket geometry comes from the BASE corpus — the stored index's
     // layout, exactly as the oracle's base-count subquery replays it
     val b = math.max(1L,

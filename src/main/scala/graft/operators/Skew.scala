@@ -10,32 +10,21 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Salted equi-join: the fact side gets a random salt in [0, salts), the
-    * dimension side is exploded `salts` times, and the join key becomes
-    * (key, salt) — spreading each hot key over `salts` reducers. Exact same
+  /** Salted inner equi-join: the fact side gets a salt in [0, 8), the
+    * dimension side is exploded 8 times, and the join key becomes
+    * (key, salt) — spreading each hot key over 8 reducers. Exact same
     * result set as `fact.join(dim, keys)`, at the cost of replicating the
     * (small) dimension side.
     */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String,
-                 salts: Int = 16, joinType: String = "inner"): DataFrame = {
-    require(salts > 0)
+  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String): DataFrame = {
+    val salts = 8
     // deterministic salt from a stable row hash — reproducible, and unlike
     // rand() safe under task retries
     val salted = fact.withColumn("__salt",
       pmod(xxhash64(struct(fact.columns.map(col).toSeq: _*)), lit(salts)))
     val exploded = dim.withColumn("__salt",
       explode(sequence(lit(0), lit(salts - 1)).cast("array<long>")))
-    salted.join(exploded, Seq(key, "__salt"), joinType).drop("__salt")
-  }
-
-  /** Per-key frequency profile — the scout query used to decide whether a
-    * join needs salting (top-N heaviest keys and their share). */
-  def keyProfile(df: DataFrame, key: String, topN: Int = 20): DataFrame = {
-    val total = df.count().toDouble
-    df.groupBy(col(key)).agg(count(lit(1)).as("n"))
-      .withColumn("share", round(col("n") / total, 6))
-      .orderBy(col("n").desc, col(key))
-      .limit(topN)
+    salted.join(exploded, Seq(key, "__salt")).drop("__salt")
   }
 
   /** Bloom-pruned join: when the dim side is SELECTIVE but too large to
@@ -49,8 +38,9 @@ object Skew {
     * only the shuffle volume changes. At 100 TB pruning a 1%-selective
     * join before the exchange is a 100× shuffle-byte cut. */
   def bloomPrunedJoin(fact: DataFrame, dim: DataFrame, factKey: String,
-                      dimKey: String, expectedItems: Long = 1L << 20,
-                      numBits: Long = 1L << 23): DataFrame = {
+                      dimKey: String): DataFrame = {
+    val expectedItems = 1L << 20
+    val numBits = 1L << 23
     val bloomRow = dim
       .agg(graft.functions.GraftFunctions.bloom_agg(
         xxhash64(col(dimKey)), expectedItems, numBits)).collect()(0)
@@ -68,9 +58,8 @@ object Skew {
     * engine-portable stand-in for the partitioner hash; what matters is
     * that SAME KEY → SAME PARTITION, so co-located key mass adds up
     * exactly) and report each partition's row and key mass plus its
-    * load ratio vs the uniform ideal. [[keyProfile]] answers "which
-    * keys are heavy"; this answers the operational question one level
-    * up — "if I shuffle/bucket on this key at this width, how bad is
+    * load ratio vs the uniform ideal. It answers the operational
+    * question "if I shuffle/bucket on this key at this width, how bad is
     * the worst task". Run it BEFORE committing a join/bucketing layout;
     * a max load_ratio of 5 means the stage runs at 5× the uniform
     * wall-clock no matter how many executors are added, and the key

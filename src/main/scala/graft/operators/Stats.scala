@@ -166,9 +166,8 @@ object Stats {
     * MAP-SIDE via an aggregate HOF against that broadcast array and
     * partial-combines to `buckets` rows; everything after is
     * buckets-sized. */
-  def psiDrift(ref: DataFrame, cur: DataFrame, valCol: String,
-               buckets: Int = 10): DataFrame = {
-    require(buckets >= 2)
+  def psiDrift(ref: DataFrame, cur: DataFrame, valCol: String): DataFrame = {
+    val buckets = 10
     val qs = (1 until buckets).map(i => i.toDouble / buckets)
     val bounds = ref.agg(
       expr(s"transform(percentile($valCol, array(${qs.mkString(", ")}))," +
@@ -398,9 +397,9 @@ object Stats {
     * DECIMAL(38,12) squared error; everything after is bins-sized.
     * Probabilities round(6) first so both engines bin identical
     * values; ECE contributions round(9) sum in DECIMAL. */
-  def calibration(df: DataFrame, probCol: String, labelCol: String,
-                  bins: Int = 10): DataFrame = {
-    require(bins >= 2)
+  def calibration(df: DataFrame, probCol: String,
+                  labelCol: String): DataFrame = {
+    val bins = 10
     val rows = df.select(
       round(col(probCol).cast("double"), 6).as("p"),
       col(labelCol).cast("double").as("y"))
@@ -704,8 +703,9 @@ object Stats {
     * Scale shape: one partial-combined count exchange; the noise is a
     * projection over the group-cardinality result. Only the noisy
     * column is released. */
-  def dpNoisyCounts(df: DataFrame, groupCol: String, epsilon: Double,
-                    salt: String = "dp"): DataFrame = {
+  def dpNoisyCounts(df: DataFrame, groupCol: String,
+                    epsilon: Double): DataFrame = {
+    val salt = "dp"
     require(epsilon > 0)
     val cnt = df.groupBy(col(groupCol).as("grp")).agg(count(lit(1)).as("n"))
     val u = (conv(substring(md5(concat_ws("|", lit(salt), col("grp"))),
@@ -1397,8 +1397,10 @@ object Stats {
     * induction (the pageRank contract). Fixed rounds, not a
     * convergence race — replayability over the last ulp of fit. */
   def fellegiSunterEm(patterns: DataFrame, bitCols: Seq[String],
-                      nCol: String, rounds: Int, p0: Double = 0.1,
-                      m0: Double = 0.9, u0: Double = 0.1): DataFrame = {
+                      nCol: String, rounds: Int): DataFrame = {
+    val p0 = 0.1
+    val m0 = 0.9
+    val u0 = 0.1
     require(bitCols.nonEmpty && rounds >= 1)
     val pat = patterns.select(col(nCol).cast("long").as("n") +:
       bitCols.zipWithIndex.map { case (c, i) => col(c).as(s"b$i") }: _*)
@@ -1519,8 +1521,9 @@ object Stats {
     * per-feature weights round(6), training accuracy at the 0.5
     * threshold and mean negative log-likelihood round(6). */
   def logisticGdHist(hist: DataFrame, xCols: Seq[String], yCol: String,
-                     nCol: String, rounds: Int = 10, lr: Double = 2.0)
+                     nCol: String, rounds: Int = 10)
       : DataFrame = {
+    val lr = 2.0
     require(xCols.nonEmpty && rounds >= 1)
     val feats = hist.select(col(nCol).cast("long").as("n") +:
       col(yCol).cast("boolean").as("y") +:
@@ -1586,9 +1589,8 @@ object Stats {
     * beta, hazard_ratio, se, z, p_value) — β is the log hazard ratio
     * of x=true vs false; p is the A&S 26.2.17 two-sided normal tail. */
   def coxNewtonBinary(durHist: DataFrame, tCol: String, xCol: String,
-                      deathCol: String, totalCol: String,
-                      rounds: Int = 4): DataFrame = {
-    require(rounds >= 1)
+                      deathCol: String, totalCol: String): DataFrame = {
+    val rounds = 4
     val h = durHist.select(col(tCol).cast("long").as("t"),
       col(xCol).cast("boolean").as("x"),
       col(deathCol).cast("long").as("d"),
@@ -1719,8 +1721,8 @@ object Stats {
     * (i, wins, comparisons, strength round(6)). Items with zero wins
     * converge to strength 0; items in no pair are absent (they played
     * no game). */
-  def bradleyTerry(pairTab: DataFrame, rounds: Int = 3): DataFrame = {
-    require(rounds >= 1)
+  def bradleyTerry(pairTab: DataFrame): DataFrame = {
+    val rounds = 3
     val pair = Materializer.Local(pairTab)
     val sym = Materializer.Local(
       pair.select(col("i"), col("j"), col("n"), col("wi").as("w"))

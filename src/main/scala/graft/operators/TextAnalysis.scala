@@ -382,9 +382,10 @@ object TextAnalysis {
     * This mirrors Spark's InjectRuntimeFilter join-pruning machinery,
     * applied at the operator level. */
   def contaminationOverlapBloom(corpus: DataFrame, evalDocs: DataFrame,
-                                idCol: String, textCol: String, n: Int,
-                                expectedItems: Long = 1L << 20,
-                                numBits: Long = 1L << 23): DataFrame = {
+                                idCol: String, textCol: String, n: Int)
+      : DataFrame = {
+    val expectedItems = 1L << 20
+    val numBits = 1L << 23
     val evalShingles = evalDocs
       .select(explode_outer(array_distinct(shingles(col(textCol), n)))
         .as("sh"))
@@ -424,21 +425,17 @@ object TextAnalysis {
     * and the per-doc count is a map-side broadcast join + partial count.
     * The corpus is shingled twice (once per pass) — shingling is a narrow
     * codegen'd projection, which at 100 TB is cheaper than materializing
-    * the exploded (doc, shingle) set the two passes share. With
-    * `hashKeys = true` the DF aggregate and broadcast key on
-    * `xxhash64(shingle)` — the shuffle and broadcast carry 8-byte longs
-    * instead of passage strings (the production default; the string form
-    * exists for engine-portable oracle checks, and a spec pins the two
-    * equal at test scale). */
+    * the exploded (doc, shingle) set the two passes share. Shingles
+    * are word 3-grams, keyed by the passage string itself (the
+    * engine-portable form the oracle replays). */
   def boilerplateStats(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, minDf: Long = 5,
-                       hashKeys: Boolean = false): DataFrame = {
-    def keyed(c: Column): Column = if (hashKeys) xxhash64(c) else c
-    // generators can't nest inside expressions: explode, then key
+                       minDf: Long = 5): DataFrame = {
+    val n = 3
+    // generators can't nest inside expressions: explode, then rename
     val ex = docs
       .select(col(idCol).as("doc_id"),
         explode_outer(array_distinct(shingles(col(textCol), n))).as("sh0"))
-      .select(col("doc_id"), keyed(col("sh0")).as("sh"))
+      .select(col("doc_id"), col("sh0").as("sh"))
     val frequent = ex.groupBy(col("sh"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
@@ -660,18 +657,14 @@ object TextAnalysis {
     * count, and the text rewrite — the only per-token work — runs ONLY
     * over affected documents, as a map-side HOF filter against each
     * document's own (tiny) merged span list. No token-level corpus
-    * explode, no cartesian anything. With `hashKeys = true` every
-    * span-keyed shuffle and join carries `xxhash64(span)` — 8-byte longs
-    * instead of n-word passage strings (the production default at scale;
-    * the string form exists for engine-portable oracle checks, and a
-    * spec pins the two equal at test scale — the q71 hashKeys
-    * contract). */
+    * explode, no cartesian anything. Spans are keyed by the n-word
+    * passage string itself (the engine-portable form the oracle
+    * replays); a span must occur at least twice to be cut. */
   def spanDedup(docs: DataFrame, idCol: String, textCol: String,
-                n: Int = 6, minOcc: Long = 2,
-                hashKeys: Boolean = false): DataFrame = {
+                n: Int = 6): DataFrame = {
+    val minOcc = 2
     import org.apache.spark.sql.expressions.Window
-    require(n > 0 && minOcc >= 2)
-    def keyed(c: Column): Column = if (hashKeys) xxhash64(c) else c
+    require(n > 0)
     // positional span occurrences: (doc_id, pos, span, doc token count);
     // word_shingles emits the whole short doc as its single "span" for
     // len < n, and the interval end below clamps to the doc's last token
@@ -689,7 +682,7 @@ object TextAnalysis {
         posexplode_outer(shingles(col("sd_text"), n))
           .as(Seq("pos", "sh0")))
       .select(col("doc_id"), col("n_toks"), col("pos"),
-        keyed(col("sh0")).as("sh")))
+        col("sh0").as("sh")))
     val freq = occ.groupBy(col("sh"))
       .agg(count(lit(1)).as("occ_cnt"))
       .filter(col("occ_cnt") >= minOcc)
@@ -796,8 +789,9 @@ object TextAnalysis {
     * holds two scalars (V, nothing else). The per-doc ln-sum
     * accumulates in DECIMAL(38,6) (house dsum rule) so partial-agg
     * order can never flip a bit. */
-  def bigramSurprisal(docs: DataFrame, idCol: String, textCol: String,
-                      alpha: Double = 0.5): DataFrame = {
+  def bigramSurprisal(docs: DataFrame, idCol: String,
+                      textCol: String): DataFrame = {
+    val alpha = 0.5
     val base = docs.select(col(idCol).as("doc_id"),
       tokens(col(textCol)).as("tk"))
     val vocabSize: Double = base
@@ -853,10 +847,11 @@ object TextAnalysis {
     * the top-k% selection is a per-doc (entity-bounded) window. lp
     * requantizes round(9) BEFORE ranking and summing, and k is exact
     * integer ceil, so the oracle replay is bit-identical. */
-  def minKSurprisal(docs: DataFrame, idCol: String, textCol: String,
-                    alpha: Double = 0.5, kFrac: Int = 5): DataFrame = {
+  def minKSurprisal(docs: DataFrame, idCol: String,
+                    textCol: String): DataFrame = {
+    val alpha = 0.5
+    val kFrac = 5
     import org.apache.spark.sql.expressions.Window
-    require(kFrac >= 1)
     val base = docs.select(col(idCol).as("doc_id"),
       tokens(col(textCol)).as("tk"))
     val vocabSize: Double = base
@@ -926,8 +921,8 @@ object TextAnalysis {
     * must pay).
     * Returns (id, chunk_id, start_pos, chunk_len, digest, n_dups). */
   def cdcChunks(df: DataFrame, idCol: String, textCol: String,
-                w: Int = 8, dupCounts: Boolean = true): DataFrame = {
-    require(w > 0)
+                dupCounts: Boolean = true): DataFrame = {
+    val w = 8
     val txt = col(textCol)
     val chunks = df.select(col(idCol).as("id"), txt.as("_t"),
         posexplode(graft.functions.GraftFunctions.cdc_pairs(txt, w)))
@@ -961,9 +956,11 @@ object TextAnalysis {
     * every token with share >= minShare; the result is driver-bounded by
     * construction (at most 1/minShare rows can clear the threshold).
     */
-  def heavyHitters(docs: DataFrame, textCol: String, minShare: Double,
-                   eps: Double = 1e-4, confidence: Double = 0.99,
-                   seed: Int = 42): DataFrame = {
+  def heavyHitters(docs: DataFrame, textCol: String,
+                   minShare: Double): DataFrame = {
+    val eps = 1e-4
+    val confidence = 0.99
+    val seed = 42
     require(minShare > 0 && minShare <= 1)
     val toks = docs.select(explode(tokens(col(textCol))).as("token"))
     // one pass: total count + the distributed CM sketch (binary scalar)
@@ -1046,9 +1043,10 @@ object TextAnalysis {
     * which is what lets it run as the first gate of a 100 TB cleaning
     * cascade (cheapest filter first, everything downstream sees fewer
     * rows). Returns per-doc rule components + `n_fail`/`keep`. */
-  def gopherRules(docs: DataFrame, idCol: String, textCol: String,
-                  minWords: Long = 50L, maxWords: Long = 100000L):
+  def gopherRules(docs: DataFrame, idCol: String, textCol: String):
       DataFrame = {
+    val minWords = 50L
+    val maxWords = 100000L
     val toks = tokens(col(textCol))
     val stops = langProfiles.toMap.apply("en")
     val nWords = size(toks).cast("long")
@@ -1293,7 +1291,8 @@ object TextAnalysis {
     * size is the one driver scalar.
     */
   def bigramCrossEntropy(docs: DataFrame, idCol: String, textCol: String,
-                         isTrain: Column, alpha: Double = 1.0): DataFrame = {
+                         isTrain: Column): DataFrame = {
+    val alpha = 1.0
     val base = Materializer.Local(docs.select(col(idCol).as("doc_id"),
       tokens(col(textCol)).as("tk"), isTrain.as("is_train")))
     def bigrams(df: DataFrame) = df.select(col("doc_id"),
@@ -1354,7 +1353,8 @@ object TextAnalysis {
     * round(9) DECIMAL(38,9). Returns ONE row: (n_held_bigrams,
     * n_scored, n_oov, oov_rate, xent_kn, ppl_kn). */
   def kneserNeyXent(docs: DataFrame, idCol: String, textCol: String,
-                    isTrain: Column, discount: Double = 0.75): DataFrame = {
+                    isTrain: Column): DataFrame = {
+    val discount = 0.75
     val base = Materializer.Local(docs.select(col(idCol).as("doc_id"),
       tokens(col(textCol)).as("tk"), isTrain.as("is_train")))
     def bigrams(df: DataFrame) = df.select(
@@ -1428,9 +1428,10 @@ object TextAnalysis {
     * at pos 0.
     */
   def winnowingFingerprints(docs: DataFrame, idCol: String,
-                            textCol: String, k: Int = 4, w: Int = 4)
+                            textCol: String)
       : DataFrame = {
-    require(k >= 1 && w >= 1)
+    val k = 4
+    val w = 4
     val hashed = Materializer.Local(docs.select(col(idCol).as("id"),
       transform(shingles(col(textCol), k),
         g => substring(md5(g), 1, 8)).as("hs")))
@@ -1543,8 +1544,9 @@ object TextAnalysis {
     * order-independent, so any SQL engine replays it from a
     * per-character GROUP BY); the rollup is a group-keyed
     * partial-combined aggregate. */
-  def entropyGate(docs: DataFrame, groupCol: String, textCol: String,
-                  lowBits: Double = 3.5): DataFrame = {
+  def entropyGate(docs: DataFrame, groupCol: String,
+                  textCol: String): DataFrame = {
+    val lowBits = 3.5
     // NULL text scores 0.0 (an empty doc is maximally junk), exactly like
     // the SQL replay's LEFT JOIN + COALESCE(h, 0.0): without the coalesce
     // char_entropy(NULL) is NULL, which silently drops the doc from
@@ -1603,11 +1605,11 @@ object TextAnalysis {
     * to a FIXED n positions and dedups per (doc, position) — bounded
     * fan-out, all equi-keyed exchanges, no all-pairs anywhere. */
   def repeatedSpanScrub(docs: DataFrame, groupCol: String,
-                        textCol: String, idCol: String = "doc_id",
-                        n: Int = 3, minDocs: Long = 10L): DataFrame = {
-    require(n >= 2 && minDocs >= 2)
+                        textCol: String, minDocs: Long = 10L): DataFrame = {
+    val n = 3
+    require(minDocs >= 2)
     import org.apache.spark.sql.expressions.Window
-    val base = docs.select(col(idCol).as("id"), col(groupCol).as("grp"),
+    val base = docs.select(col("doc_id").as("id"), col(groupCol).as("grp"),
         tokens(coalesce(col(textCol), lit(""))).as("raw"))
       .withColumn("m", size(col("raw")))
     val pos = base.select(col("id"), col("m"),
@@ -1666,8 +1668,9 @@ object TextAnalysis {
     * partial-combined aggregates + one lang-keyed join of two
     * lang-bounded frames — nothing here scales past |langs x sources|
     * after the first exchange. */
-  def fertilityBracket(partials: DataFrame, tol: Double = 0.02)
+  def fertilityBracket(partials: DataFrame)
       : DataFrame = {
+    val tol = 0.02
     val per = partials.groupBy(col("lang"), col("source"))
       .agg(sum(col("toks")).cast("long").as("toks"),
         sum(col("chars")).cast("long").as("chars"))

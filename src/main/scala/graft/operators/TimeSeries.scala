@@ -152,8 +152,9 @@ object TimeSeries {
     * back over the hourly table. Variance from exact longs in one
     * double op order, round(6); population σ (the profile is the whole
     * window, not a sample). */
-  def seasonalAnomalies(points: DataFrame, keyCol: String, tsCol: String,
-                        z: Double = 3.0): DataFrame = {
+  def seasonalAnomalies(points: DataFrame, keyCol: String,
+                        tsCol: String): DataFrame = {
+    val z = 3.0
     // pinned: the hourly table feeds the profile AND the flag join
     val base = Materializer.Local(points
       .groupBy(col(keyCol).as("key"),
@@ -204,9 +205,10 @@ object TimeSeries {
     * broadcast back (the q158 idiom); windows are key-partitioned and
     * calendar-bounded. Constant series (σ = 0) carry no shift signal
     * and are dropped. */
-  def cusumChangepoints(points: DataFrame, keyCol: String, tsCol: String,
-                        slack: Double = 0.5, threshold: Double = 4.0)
+  def cusumChangepoints(points: DataFrame, keyCol: String, tsCol: String)
       : DataFrame = {
+    val slack = 0.5
+    val threshold = 4.0
     // pinned: the hourly table feeds the profile AND the scored series
     val base = Materializer.Local(points
       .groupBy(col(keyCol).as("key"),
@@ -262,9 +264,9 @@ object TimeSeries {
     * covers (a bounded explode), then one (user, day) distinct +
     * per-day count. No window function, no range self-join; every
     * aggregate partial-combines. */
-  def activeUsers(events: DataFrame, tsCol: String, userCol: String,
-                  window: Int = 7): DataFrame = {
-    require(window >= 1)
+  def activeUsers(events: DataFrame, tsCol: String,
+                  userCol: String): DataFrame = {
+    val window = 7
     // pinned: the user-day table feeds DAU, the fan-out, and the spine
     val ud = Materializer.Local(events
       .select(col(userCol).as("u"), to_date(col(tsCol)).as("day"))
@@ -301,7 +303,8 @@ object TimeSeries {
     * accumulate in DECIMAL(38,9) (order-proof), one exp at the end,
     * round(6). */
   def kaplanMeierRetention(events: DataFrame, userCol: String,
-                           tsCol: String, censorDays: Int = 7): DataFrame = {
+                           tsCol: String): DataFrame = {
+    val censorDays = 7
     val per = events
       .groupBy(col(userCol).as("u"))
       .agg(to_date(min(col(tsCol))).as("d0"),
@@ -451,9 +454,9 @@ object TimeSeries {
     * hours it influences (bounded explode, the q160 shape), one
     * (key, hour) partial-combined sum, one join back to attach the
     * actual hour's count. */
-  def ewmaHourly(events: DataFrame, keyCol: String, tsCol: String,
-                 window: Int = 24): DataFrame = {
-    require(window >= 1 && window <= 62, "2^window must fit a long")
+  def ewmaHourly(events: DataFrame, keyCol: String,
+                 tsCol: String): DataFrame = {
+    val window = 24 // 2^window must fit a long
     val hourly = Materializer.Local(events
       .groupBy(col(keyCol).as("key"), date_trunc("hour", col(tsCol))
         .as("hour"))

@@ -78,7 +78,7 @@ private[graft] object DedupQueries {
 
     QuerySpec("q37_dedup_minhash_lsh", ((s, dir) => {
       Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-          k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = false)
+          bands = 4, threshold = 0.5, fast = false)
         .orderBy(col("a_id"), col("b_id"))
     }),
       minhashPairsSql,
@@ -112,7 +112,7 @@ private[graft] object DedupQueries {
       // the seeded-FNV scale path of q37; oracle = ground-truth all-pairs
       // Jaccard (equality doubles as an LSH recall=1.0 check on this data)
       Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-          k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = true)
+          bands = 4, threshold = 0.5, fast = true)
         .orderBy(col("a_id"), col("b_id"))
     }),
       // Ground-truth oracle for the seeded-FNV fast path: DuckDB cannot
@@ -149,7 +149,7 @@ private[graft] object DedupQueries {
       // keep-one-representative step); pairs from the fast-FNV LSH path,
       // whose confirmed set equals ground truth on this corpus (q39)
       val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id",
-        "text", k = 16, bands = 4, shingleN = 3, threshold = 0.5,
+        "text", bands = 4, threshold = 0.5,
         fast = true)
       Dedup.nearDupClusters(pairs).orderBy(col("doc_id"))
     }),
@@ -193,8 +193,8 @@ private[graft] object DedupQueries {
       // cluster, then min id among the maxima) — no cluster-partitioned
       // window, so a million-member spam cluster can't funnel one task.
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
-        bands = 4, shingleN = 3, threshold = 0.5, fast = true)
+      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
+        bands = 4, threshold = 0.5, fast = true)
       Dedup.keepBest(docs, pairs, "doc_id",
           TextAnalysis.qualityScore(col("text")))
         .orderBy(col("cluster_id"))
@@ -212,8 +212,7 @@ private[graft] object DedupQueries {
     QuerySpec("q58_simhash_pairs", ((s, dir) => {
       // block-banded SimHash candidates + exact Hamming verify
       // (recall 1.0 for hamming <= 3 by pigeonhole over 4 blocks)
-      Dedup.simhashNearDupPairs(t(s, dir, "documents"), "doc_id", "text",
-          maxHamming = 3)
+      Dedup.simhashNearDupPairs(t(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("a_id"), col("b_id"))
     }),
       // all-pairs hamming <= 3 IS the banded result: 4-block banding has
@@ -230,7 +229,7 @@ private[graft] object DedupQueries {
       // representative step for a media corpus.
       val media = Multimodal.dhashMediaFromDocuments(t(s, dir, "documents"))
       val hashes = Multimodal.extractImageHashes(media).toDF()
-      val pairs = Dedup.imageNearDupPairs(hashes, maxHamming = 3)
+      val pairs = Dedup.imageNearDupPairs(hashes)
       Dedup.nearDupClusters(pairs).orderBy(col("doc_id"))
     }),
       """WITH RECURSIVE m AS (
@@ -279,7 +278,7 @@ private[graft] object DedupQueries {
       // reason as q42 (synthetic embeddings are near-orthogonal; the
       // positive path must be exercised at verify scale)
       Dedup.semanticDedupDrops(t(s, dir, "embeddings"), "vec_id",
-          "embedding", planes = 6, threshold = 0.4, exact = true)
+          "embedding", planes = 6, threshold = 0.4)
         .select(col("id").as("vec_id"), col("dup_of"), col("n_earlier"))
         .orderBy(col("vec_id"))
     }),
@@ -312,7 +311,7 @@ private[graft] object DedupQueries {
       // be exercised at verify scale: 34 raw hits at sf0.01).
       val emb = t(s, dir, "embeddings")
       Dedup.semanticContamination(emb, emb.filter(col("vec_id") < 30),
-          "vec_id", "embedding", threshold = 0.35, exact = true)
+          "vec_id", "embedding", threshold = 0.35)
         .select(col("id").as("vec_id"), col("n_hits"), col("best_eval"),
           col("sim"))
         .orderBy(col("vec_id"))
@@ -451,7 +450,7 @@ private[graft] object DedupQueries {
       // 0.4 keeps the gate exercising the positive path (5 rows at sf0.01,
       // 57 at sf0.1) through the same bucket/verify machinery
       Dedup.embeddingNearDupPairs(t(s, dir, "embeddings"), "vec_id",
-          "embedding", planes = 6, threshold = 0.4, exact = true)
+          "embedding", planes = 6, threshold = 0.4)
         .orderBy(col("a_id"), col("b_id"))
     }),
       s"""WITH ${bucketCtes(6)},
@@ -553,7 +552,7 @@ private[graft] object DedupQueries {
       val labDir = new java.io.File(s".bench/q108_labels_$key").getAbsolutePath
       val labPath = ensurePersistedIndex(labDir, nRows) {
         Dedup.nearDupClusters(Dedup.minhashLshPairs(evens, "doc_id", "text",
-          k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = true))
+          bands = 4, threshold = 0.5, fast = true))
       }
       val newPairs = Dedup.minhashLshPairsIncremental(
         Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
@@ -618,7 +617,7 @@ private[graft] object DedupQueries {
           call_function("substring", base, lit(3), lit(10))))
       operators.EditJoin.editDistancePairs(
           docs.select(col("doc_id").as("id"), str.as("str")),
-          "id", "str", maxDist = 1)
+          "id", "str")
         .orderBy(col("a_id"), col("b_id"))
     }),
       """WITH f AS (
@@ -656,8 +655,8 @@ private[graft] object DedupQueries {
       // bounded, so the shuffled attach is cheap; AQE still broadcasts
       // the map when it is genuinely small.
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = false)
+      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", bands = 4,
+          threshold = 0.5, fast = false)
       val src = docs.select(col("doc_id"), col("source"))
       pairs
         .join(src.select(col("doc_id").as("a_id"),
@@ -766,8 +765,8 @@ private[graft] object DedupQueries {
           shingleN = 3, thetaNum = 1, thetaDen = 2)
           .select(col("a_id"), col("b_id")))
       val lsh = operators.Materializer.Local(
-        Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16, bands = 4,
-          shingleN = 3, threshold = 0.5, fast = false)
+        Dedup.minhashLshPairs(docs, "doc_id", "text", bands = 4,
+            threshold = 0.5, fast = false)
           .select(col("a_id"), col("b_id")))
       val common = exact.join(lsh, Seq("a_id", "b_id"), "left_semi")
       exact.agg(count(lit(1)).as("n_exact"))
@@ -862,8 +861,8 @@ private[graft] object DedupQueries {
       // readout a dedup pipeline hands to curation: what each duplicate
       // family is, who contributes it, and which copy to keep.
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
-        bands = 4, shingleN = 3, threshold = 0.5, fast = true)
+      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
+        bands = 4, threshold = 0.5, fast = true)
       val clusters = Dedup.nearDupClusters(pairs)
       val mem = clusters.join(
         docs.select(col("doc_id"), col("source"),
@@ -945,7 +944,7 @@ private[graft] object DedupQueries {
       // sampler draw-for-draw (round(9) requantization after every libm
       // call, arg-min tie-break on term asc).
       Dedup.weightedMinhashPairs(t(s, dir, "documents"), "doc_id",
-          "text", k = 8, bands = 4, thetaNum = 3, thetaDen = 5)
+          "text", k = 8, bands = 4)
         .orderBy(col("a_id"), col("b_id"))
     }),
       // Ioffe CWS replay: the same salted-md5 uniforms, Gamma(2,1) algebra
@@ -1053,8 +1052,8 @@ private[graft] object DedupQueries {
       // only broadcasts are 1-row aggregates.
       val docs = t(s, dir, "documents")
       val pairs = operators.Materializer.Local(
-        Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16, bands = 4,
-          shingleN = 3, threshold = 0.5, fast = true)
+        Dedup.minhashLshPairs(docs, "doc_id", "text", bands = 4,
+            threshold = 0.5, fast = true)
           .select(col("a_id"), col("b_id")))
       val asg = operators.Materializer.Local(
         Dedup.clusterAwareSplit(docs, pairs, "doc_id"))
@@ -1150,8 +1149,8 @@ private[graft] object DedupQueries {
       // partial-combined aggregates; the overall shares ride a 1-row
       // broadcast.
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
-          bands = 4, shingleN = 3, threshold = 0.5, fast = true)
+      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
+          bands = 4, threshold = 0.5, fast = true)
         .select(col("a_id"), col("b_id"))
       val asg = operators.Materializer.Local(
         Dedup.clusterAwareSplit(docs, pairs, "doc_id")
@@ -1244,7 +1243,7 @@ private[graft] object DedupQueries {
       // below the design threshold is part of the pinned semantics —
       // the oracle replays the identical signature/band/verify pipeline.
       val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"),
-        "doc_id", "text", k = 16, bands = 4, shingleN = 3,
+        "doc_id", "text", bands = 4,
         threshold = 0.3, fast = false)
       Dedup.dedupThresholdSweep(pairs,
         Seq(0.3, 0.4, 0.5, 0.6, 0.7, 0.8))
@@ -1275,8 +1274,8 @@ private[graft] object DedupQueries {
           .otherwise(expr("replace(text, ' ', ', ')")).as("text"))
       val norm = injected.select(col("doc_id"),
         TextAnalysis.normalizeForDedup(col("text")).as("text"))
-      Dedup.minhashLshPairs(norm, "doc_id", "text",
-          k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = false)
+      Dedup.minhashLshPairs(norm, "doc_id", "text", bands = 4, threshold = 0.5,
+          fast = false)
         .orderBy(col("a_id"), col("b_id"))
     }),
       // the scramble (accent/upper/re-punctuate by residue class), the
@@ -1313,8 +1312,8 @@ private[graft] object DedupQueries {
       // quality argmax) and the q311 integer recipe; the kept-id semi
       // join is UNHINTED (kept ids are SF-linear — one per cluster).
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", k = 16,
-        bands = 4, shingleN = 3, threshold = 0.5, fast = true)
+      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
+        bands = 4, threshold = 0.5, fast = true)
       val kept = Dedup.keepBest(docs, pairs, "doc_id",
           TextAnalysis.qualityScore(col("text")))
         .select(col("kept_id").as("doc_id"))
@@ -1392,7 +1391,7 @@ private[graft] object DedupQueries {
       // the bounded equi-join output; the census adds the oriented
       // wedge join only.
       val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"),
-          "doc_id", "text", k = 16, bands = 4, shingleN = 3,
+          "doc_id", "text", bands = 4,
           threshold = 0.5, fast = false)
         .select(col("a_id").as("src"), col("b_id").as("dst"))
       operators.Graph.triangleStats(pairs)
@@ -1440,16 +1439,15 @@ private[graft] object DedupQueries {
       // its own bounded equi-join plan; the Venn adds one (a, b)
       // exchange over the unioned pair sets.
       val d = t(s, dir, "documents")
-      val mh = Dedup.minhashLshPairs(d, "doc_id", "text", k = 16,
-          bands = 4, shingleN = 3, threshold = 0.5, fast = false)
+      val mh = Dedup.minhashLshPairs(d, "doc_id", "text",
+          bands = 4, threshold = 0.5, fast = false)
         .select(col("a_id").as("a"), col("b_id").as("b"),
           lit(1L).as("bit"))
-      val sh = Dedup.simhashNearDupPairs(d, "doc_id", "text",
-          maxHamming = 3)
+      val sh = Dedup.simhashNearDupPairs(d, "doc_id", "text")
         .select(col("a_id").as("a"), col("b_id").as("b"),
           lit(2L).as("bit"))
       val fpd = operators.TextAnalysis.winnowingFingerprints(d,
-          "doc_id", "text", k = 4, w = 4)
+          "doc_id", "text")
         .select(col("id"), col("h")).distinct()
       val keep = fpd.groupBy(col("h")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= 100)

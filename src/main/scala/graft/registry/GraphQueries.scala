@@ -36,13 +36,12 @@ private[graft] object GraphQueries {
         .distinct()
       val edges = base.select(col("c").as("src"), col("p").as("dst"))
         .unionByName(base.select(col("p").as("src"), col("c").as("dst")))
-      // broadcastRanks: this is an ENTITY graph — the node set is
-      // customers + suppliers (dimension-scale even at 100 TB), so the
-      // rank table broadcasts and the big edge table never shuffles
-      // distinctEdges=false: `base` is distinct and the two union arms
-      // cannot collide (prefixes differ), so the dedup shuffle is skipped
-      operators.Graph.pageRank(edges, iters = 5, broadcastRanks = true,
-          distinctEdges = false)
+      // this is an ENTITY graph — the node set is customers + suppliers
+      // (dimension-scale even at 100 TB), so the rank table broadcasts
+      // and the big edge table never shuffles. pageRank needs distinct
+      // edges: `base` is distinct and the two union arms cannot collide
+      // (prefixes differ)
+      operators.Graph.pageRank(edges, iters = 5)
         .orderBy(col("node"))
     }),
       // the q91 pattern: DuckDB RE-RUNS all 5 PageRank iterations through an
@@ -189,8 +188,7 @@ private[graft] object GraphQueries {
         .unionAll(edges.select(col("dst").as("node"))).distinct()
       // part graph: the distance table is dimension-scale -> broadcast
       operators.Graph.bfsHops(edges,
-          nodes.filter(col("node") % 101 === 0), maxHops = 3,
-          broadcastDist = true)
+          nodes.filter(col("node") % 101 === 0), maxHops = 3)
         .orderBy(col("node"))
     }),
       bfsSql(3)),
@@ -218,9 +216,8 @@ private[graft] object GraphQueries {
         .select(concat(lit("c"), col("c_custkey")).as("node"))
       // entity graph (customers + suppliers): ranks broadcast, edges
       // never shuffle; base is distinct and the union arms can't
-      // collide (prefixes differ), so the dedup shuffle is skipped
-      operators.Graph.personalizedPageRank(edges, seeds, iters = 5,
-          broadcastRanks = true, distinctEdges = false)
+      // collide (prefixes differ), so the edges are distinct
+      operators.Graph.personalizedPageRank(edges, seeds, iters = 5)
         .orderBy(col("node"))
     }),
       {
@@ -267,8 +264,7 @@ private[graft] object GraphQueries {
       val nodes = edges.select(col("src").as("node"))
         .unionAll(edges.select(col("dst").as("node"))).distinct()
       operators.Graph.weightedShortestPaths(edges,
-          nodes.filter(col("node") % 101 === 0), rounds = 3,
-          broadcastDist = true)
+          nodes.filter(col("node") % 101 === 0), rounds = 3)
         .orderBy(col("node"))
     }),
       wspSql(3)),
@@ -281,7 +277,7 @@ private[graft] object GraphQueries {
       // exact distinct here exists for the q126-style gate).
       val li = t(s, dir, "lineitem")
       val edges = copurchaseEdges(li)
-      operators.Graph.neighborhoodFunction(edges, lgK = 12)
+      operators.Graph.neighborhoodFunction(edges)
     }),
       // exact ball sizes; the sketch estimate is engine-specific, so the
       // hash-checked column is the q19/q126 gate boolean (oracle: TRUE)

@@ -21,7 +21,7 @@ private[graft] object MultimodalQueries {
       // undecodable bytes and must be flagged out, not hashed.
       val media = Multimodal.dhashMediaFromDocuments(t(s, dir, "documents"))
       val hashes = Multimodal.extractImageHashes(media).toDF()
-      Dedup.imageNearDupPairs(hashes, maxHamming = 3)
+      Dedup.imageNearDupPairs(hashes)
         .orderBy(col("a_id"), col("b_id"))
     }),
       """WITH m AS (
@@ -78,8 +78,7 @@ private[graft] object MultimodalQueries {
           media.filter(_.doc_id % 2 == 1)).toDF()
         .filter(col("decoded"))
         .select(col("doc_id").as("id"), col("dhash").as("sig"))
-      Dedup.bandedHammingPairsIncremental(newSig, s.read.parquet(idxPath),
-          maxHamming = 3)
+      Dedup.bandedHammingPairsIncremental(newSig, s.read.parquet(idxPath))
         .orderBy(col("a_id"), col("b_id"))
     }),
       """WITH m AS (
@@ -215,7 +214,7 @@ private[graft] object MultimodalQueries {
       // flagged out, not hashed.
       val media = Multimodal.ahashMediaFromDocuments(t(s, dir, "documents"))
       val hashes = Multimodal.extractAudioHashes(media).toDF()
-      Dedup.audioNearDupPairs(hashes, maxHamming = 3)
+      Dedup.audioNearDupPairs(hashes)
         .orderBy(col("a_id"), col("b_id"))
     }),
       """WITH m AS (
@@ -261,7 +260,7 @@ private[graft] object MultimodalQueries {
       // undecodable bytes and must be flagged out, not hashed.
       val media = Multimodal.vhashMediaFromDocuments(t(s, dir, "documents"))
       val hashes = Multimodal.extractVideoHashes(media).toDF()
-      Dedup.videoNearDupPairs(hashes, maxHamming = 3)
+      Dedup.videoNearDupPairs(hashes)
         .orderBy(col("a_id"), col("b_id"))
     }),
       """WITH m AS (

@@ -1056,7 +1056,7 @@ private[graft] object RelationalQueries {
         .agg(count(lit(1)).as("n_events"))
       operators.Skew.saltedJoin(
           ev.select(col("user_id"), col("event_id"), col("value")),
-          dim, "user_id", salts = 8)
+          dim, "user_id")
         .groupBy(col("user_id"), col("n_events"))
         .agg(count(lit(1)).as("n_joined"),
           sum(col("value").cast("decimal(38,6)")).cast("double")

@@ -77,8 +77,7 @@ private[graft] object SimilarityQueries {
       // LSH-bucketed ANN with exact re-rank — oracle-checkable (portable
       // md5-derived hyperplanes + decimal-exact cosine)
       val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30), k = 5,
-          planes = 8, exact = true)
+      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30), k = 5)
         .orderBy(col("query_id"), col("rk"))
     }),
       s"""WITH ${bucketCtes(8)},
@@ -113,7 +112,7 @@ private[graft] object SimilarityQueries {
       // correctness-pinned against the oracle's probe expansion
       val emb = t(s, dir, "embeddings")
       Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30), k = 5,
-          planes = 8, exact = true, probeBits = 1)
+          probeBits = 1)
         .orderBy(col("query_id"), col("rk"))
     }),
       s"""WITH ${bucketCtes(8)},
@@ -152,7 +151,7 @@ private[graft] object SimilarityQueries {
       // broadcast join map-side; same bounded-heap shape as q40
       val emb = t(s, dir, "embeddings")
       Similarity.hardNegativesTopK(emb, emb.filter(col("vec_id") < 30),
-          k = 5, exact = true)
+          k = 5)
         .orderBy(col("query_id"), col("rk"))
     }),
       s"""WITH q AS (
@@ -313,7 +312,7 @@ private[graft] object SimilarityQueries {
       // IVF cell-probe ANN; seeds = first 8 vectors — oracle-checkable
       val emb = t(s, dir, "embeddings")
       Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 30),
-          emb.filter(col("vec_id") < 8), k = 5, exact = true)
+          emb.filter(col("vec_id") < 8), k = 5)
         .orderBy(col("query_id"), col("rk"))
     }),
       s"""WITH seeds AS (
@@ -440,7 +439,7 @@ private[graft] object SimilarityQueries {
       // corpus. df is a ≤|query|-row broadcast; N/avgdl ride a 1-row
       // broadcast cross join; the top-N is a bounded TakeOrdered.
       operators.Retrieval.bm25(t(s, dir, "documents"), "doc_id", "text",
-          Seq("spark", "join", "window"), k1 = 1.2, b = 0.75, topN = 20)
+          Seq("spark", "join", "window"), topN = 20)
         .orderBy(col("rk"))
     }),
       bm25Sql("'spark', 'join', 'window'", 20)),
@@ -511,7 +510,7 @@ private[graft] object SimilarityQueries {
       val dense = Similarity.bruteForceTopK(emb,
           emb.filter(col("vec_id") === 0), k = 30, exact = true)
         .select(col("neighbor_id").as("doc_id"), col("rk"))
-      operators.Retrieval.rrfFuse(Seq(lex, dense), c = 60, topN = 10)
+      operators.Retrieval.rrfFuse(Seq(lex, dense), topN = 10)
         .orderBy(col("rk"))
     }),
       s"""WITH lex AS (
@@ -829,7 +828,7 @@ private[graft] object SimilarityQueries {
       // project against map-side. Fixed 5 iterations, sign pinned by
       // the max-|component| normalization.
       Similarity.pcaTopComponent(t(s, dir, "embeddings"), "vec_id",
-        "embedding", iters = 5)
+        "embedding")
     }),
       // DuckDB replays the full power iteration: decimal-exact moment
       // cells, covariance round(12), per-round matrix-vector products as
@@ -1149,7 +1148,7 @@ private[graft] object SimilarityQueries {
       val docs = t(s, dir, "documents")
       val cand = operators.Materializer.Local(
         operators.Retrieval.bm25(docs, "doc_id", "text",
-          Seq("spark", "join", "window"), k1 = 1.2, b = 0.75, topN = 20))
+          Seq("spark", "join", "window"), topN = 20))
       val sh = operators.Materializer.Local(
         docs.join(broadcast(cand.select(col("doc_id"))), Seq("doc_id"))
           .select(col("doc_id"), array_distinct(
@@ -1390,11 +1389,10 @@ private[graft] object SimilarityQueries {
       // label)
       val shared = operators.Retrieval.trimmedPostings(docs, "doc_id",
         "text", sets.flatMap(_._2).distinct)
-      val a = operators.Retrieval.bm25Batch(docs, "doc_id", "text",
-          sets, k1 = 1.2, b = 0.75, topN = 10, postings = Some(shared))
+      val a = operators.Retrieval.bm25Batch(shared, sets)
         .select(col("q"), col("doc_id"), col("rk").as("ra"))
       val b = operators.Retrieval.queryLikelihoodBatch(docs, "doc_id",
-          "text", sets, mu = 100.0, topN = 10, postings = Some(shared))
+          "text", sets, topN = 10, postings = Some(shared))
         .select(col("q"), col("doc_id"), col("rk").as("rb"))
       val w = rboWeights.toDF("m", "c")
       a.join(b, Seq("q", "doc_id"))

@@ -235,8 +235,8 @@ private[graft] object SparkHelpers {
       md5(col("text")).as("k"))
     val wk = d.groupBy(md5(col("text")).as("k"))
       .agg(min(col("doc_id")).as("keep"))
-    val nd = Dedup.minhashLshPairs(d, "doc_id", "text", k = 16,
-        bands = 4, shingleN = 3, threshold = 0.5, fast = false)
+    val nd = Dedup.minhashLshPairs(d, "doc_id", "text",
+        bands = 4, threshold = 0.5, fast = false)
       .select(col("b_id")).distinct()
     val ov = TextAnalysis.contaminationOverlap(d,
         d.filter(col("doc_id") < 10), "doc_id", "text", n = 5)

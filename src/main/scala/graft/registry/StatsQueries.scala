@@ -22,7 +22,7 @@ private[graft] object StatsQueries {
       val docs = t(s, dir, "documents")
       operators.Sampling.dsirResample(docs,
           docs.filter(col("source") === "src0"), "doc_id", "text",
-          n = 100, alpha = 0.5)
+          n = 100)
         .select(col("rk"), col("id").as("doc_id"), col("logw"), col("score"))
         .orderBy(col("rk"))
     }),
@@ -354,7 +354,7 @@ private[graft] object StatsQueries {
       val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
       operators.Stats.psiDrift(
         ev.filter(col("ts") < cutoff),
-        ev.filter(col("ts") >= cutoff), "value", buckets = 10)
+        ev.filter(col("ts") >= cutoff), "value")
     }),
       """WITH ref AS (
         |  SELECT value FROM events
@@ -1670,7 +1670,7 @@ private[graft] object StatsQueries {
           round((col("v") - mv) / sdv, 6).as("x2"),
           col("y"), col("n"))
       operators.Stats.logisticGdHist(feats, Seq("x1", "x2"), "y", "n",
-        rounds = 10, lr = 2.0)
+        rounds = 10)
     }),
       {
       val prob = "1.0 / (1.0 + exp(-(w0 + w1 * x1 + w2 * x2)))"
@@ -1773,7 +1773,7 @@ private[graft] object StatsQueries {
         sum(when(col("death"), 1L).otherwise(0L)).as("deaths"),
         count(lit(1)).as("total"))
       operators.Stats.coxNewtonBinary(hist, "t", "x", "deaths",
-        "total", rounds = 4)
+        "total")
     }),
       {
       val mu = "CAST(n1r AS DOUBLE) * exp(beta) / (CAST(n0r AS DOUBLE)" +
@@ -1899,7 +1899,7 @@ private[graft] object StatsQueries {
             round((col("v") - mv) / sdv, 6).as("x2"),
             col("tr"), col("n"), col("sumy")))
       val fit = operators.Stats.logisticGdHist(feats,
-        Seq("x1", "x2"), "tr", "n", rounds = 8, lr = 2.0)
+        Seq("x1", "x2"), "tr", "n", rounds = 8)
       val phat = least(lit(0.99), greatest(lit(0.01),
         lit(1.0) / (lit(1.0) + exp(-(col("w0") + col("w1") * col("x1")
           + col("w2") * col("x2"))))))
@@ -2183,7 +2183,7 @@ private[graft] object StatsQueries {
             round((col("v") - mv) / sdv, 6).as("x2"),
             col("tr"), col("n"), col("sumy")))
       val fit = operators.Stats.logisticGdHist(feats,
-        Seq("x1", "x2"), "tr", "n", rounds = 8, lr = 2.0)
+        Seq("x1", "x2"), "tr", "n", rounds = 8)
       val osums = feats.groupBy(col("tr")).agg(
         sum(col("n")).as("n"),
         sum(pin6(col("x1") * col("n"))).as("sx1"),
@@ -2385,7 +2385,7 @@ private[graft] object StatsQueries {
         .agg(count(lit(1)).as("n"),
           sum(when(col("sva") > col("svb"), 1L).otherwise(0L)).as("wi"),
           sum(when(col("svb") > col("sva"), 1L).otherwise(0L)).as("wj"))
-      operators.Stats.bradleyTerry(pair, rounds = 3)
+      operators.Stats.bradleyTerry(pair)
         .withColumnRenamed("i", "event_type")
         .orderBy(col("strength").desc, col("event_type"))
     }),
@@ -2778,8 +2778,7 @@ private[graft] object StatsQueries {
       // NULL-skip only holds under Spark 4's ANSI size(NULL)=NULL default
       operators.Sampling.temperatureMixture(
         t(s, dir, "documents"), "source",
-        TextAnalysis.tokenCount(coalesce(col("text"), lit(""))),
-        sqrtLevels = Seq(0, 1, 2))
+        TextAnalysis.tokenCount(coalesce(col("text"), lit(""))))
     }),
       // dyadic temperature grid: p^T via sqrt chains (IEEE-correctly-
       // rounded in both engines — deliberately NO pow, whose last ulp is
@@ -3011,7 +3010,7 @@ private[graft] object StatsQueries {
       // is ONE marginal-gain aggregate + a 1-row broadcast coverage
       // update, exact DECIMAL end to end.
       operators.Sampling.facilityLocationSelect(t(s, dir, "documents"),
-          "doc_id", "text", nCand = 30, k = 5, shingleN = 3)
+          "doc_id", "text", nCand = 30, k = 5)
         .orderBy(col("rk"))
     }),
       {

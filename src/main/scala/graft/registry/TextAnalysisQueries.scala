@@ -222,7 +222,7 @@ private[graft] object TextAnalysisQueries {
       // docs are corpus boilerplate; per-doc fraction of such passages.
       // One (shingle, count) shuffle; the Zipf head broadcasts back.
       TextAnalysis.boilerplateStats(t(s, dir, "documents"),
-          "doc_id", "text", n = 3, minDf = 5)
+          "doc_id", "text", minDf = 5)
         .orderBy(col("doc_id"))
     }),
       """WITH tk AS (
@@ -254,7 +254,7 @@ private[graft] object TextAnalysisQueries {
       // (span, count) partial-combined shuffle; rewrite is a map-side HOF
       // over affected docs only.
       TextAnalysis.spanDedup(t(s, dir, "documents"),
-          "doc_id", "text", n = 6, minOcc = 2)
+          "doc_id", "text", n = 6)
         .orderBy(col("doc_id"))
     }),
       """WITH tk AS (
@@ -426,8 +426,7 @@ private[graft] object TextAnalysisQueries {
       // bigram-LM fluency scoring (add-0.5 smoothing) — the stronger
       // cousin of q76's unigram rarity; DECIMAL accumulation keeps the
       // per-doc ln-sum order-independent
-      TextAnalysis.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text",
-          alpha = 0.5)
+      TextAnalysis.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
       s"""WITH base AS (
@@ -616,8 +615,7 @@ private[graft] object TextAnalysisQueries {
       // engine-portable md5-window boundary rule). Zero shuffle until the
       // digest dup-count exchange; the cut scan is one codegen'd kernel
       // pass per row (CdcPairs).
-      TextAnalysis.cdcChunks(t(s, dir, "documents"), "doc_id", "text",
-          w = 8)
+      TextAnalysis.cdcChunks(t(s, dir, "documents"), "doc_id", "text")
         .select(col("id").as("doc_id"), col("chunk_id"), col("start_pos"),
           col("chunk_len"), col("digest"), col("n_dups"))
         .orderBy(col("doc_id"), col("chunk_id"))
@@ -697,7 +695,7 @@ private[graft] object TextAnalysisQueries {
       // the exact counts and pins both booleans TRUE — the q19/q96
       // sketch-gate pattern.
       operators.TextAnalysis.heavyHitters(t(s, dir, "documents"), "text",
-          minShare = 0.002, eps = 1e-4, confidence = 0.99)
+          minShare = 0.002)
         .orderBy(col("token"))
     }),
       """WITH tk AS (
@@ -717,8 +715,7 @@ private[graft] object TextAnalysisQueries {
       // bounded symbol share — all in INTEGER arithmetic (no double ratio
       // ever forms), one map-side codegen'd projection, no shuffle. The
       // cheapest gate of the cleaning cascade, so it runs first at 100 TB.
-      TextAnalysis.gopherRules(t(s, dir, "documents"), "doc_id", "text",
-          minWords = 50L, maxWords = 100000L)
+      TextAnalysis.gopherRules(t(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
       s"""WITH st AS (
@@ -1134,7 +1131,7 @@ private[graft] object TextAnalysisQueries {
         iters = 8, eta = 8.0)
       val scored = operators.QualityClassifier.score(docs, "doc_id",
         "text", w, extra = Seq(label.as("is_hq")))
-      operators.Stats.calibration(scored, "p", "is_hq", bins = 10)
+      operators.Stats.calibration(scored, "p", "is_hq")
     }),
       s"""WITH ${q91Ctes(8, 8.0)},
          |scored AS (
@@ -1927,7 +1924,7 @@ private[graft] object TextAnalysisQueries {
       // at a ~2/(w+1) sampling rate the corpus never pays full-text
       // comparison for.
       val fps = operators.TextAnalysis.winnowingFingerprints(
-        t(s, dir, "documents"), "doc_id", "text", k = 4, w = 4)
+        t(s, dir, "documents"), "doc_id", "text")
       val fpd = fps.select(col("id"), col("h")).distinct()
       val keep = fpd.groupBy(col("h")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= 100)
@@ -1965,7 +1962,7 @@ private[graft] object TextAnalysisQueries {
       operators.TextAnalysis.bigramCrossEntropy(t(s, dir, "documents"),
           "doc_id", "text",
           isTrain = substring(md5(col("doc_id").cast("string")), 1, 1)
-            < lit("c"), alpha = 1.0)
+            < lit("c"))
         .orderBy(col("doc_id"))),
       s"""WITH base AS (
          |  SELECT doc_id, $toksSql AS tk,
@@ -2694,7 +2691,7 @@ private[graft] object TextAnalysisQueries {
       // plan as the surprisal family: one (doc, bigram) exchange,
       // token-keyed model joins, per-doc entity-bounded window.
       operators.TextAnalysis.minKSurprisal(t(s, dir, "documents"),
-          "doc_id", "text", alpha = 0.5, kFrac = 5)
+          "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
       s"""WITH base AS (
@@ -2917,7 +2914,7 @@ private[graft] object TextAnalysisQueries {
           .cast("int").as("tier"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("toks"))
       operators.Sampling.curriculumPlan(perDoc, col("tier"),
-        col("toks"), budget = 2000000L, nTiers = 4, maxEpochs = 4)
+        col("toks"), budget = 2000000L)
     }),
       // the q31 quality formula, quartile-quantized, then the q311
       // integer mixture algebra per cumulative stage pool
@@ -2989,7 +2986,7 @@ private[graft] object TextAnalysisQueries {
       val noisy = t(s, dir, "documents").select(col("source"),
         when(col("doc_id") % 13 === 0, lit("spam " * 40))
           .otherwise(col("text")).as("text"))
-      TextAnalysis.entropyGate(noisy, "source", "text", lowBits = 3.5)
+      TextAnalysis.entropyGate(noisy, "source", "text")
     }),
       // per-character GROUP BY replay of functions.CharEntropy: round(9)
       // DECIMAL terms sum exactly (order-independent), round(6) publish
@@ -3083,7 +3080,7 @@ private[graft] object TextAnalysisQueries {
             when(col("doc_id") % 9 === 0,
                 lit(" all rights reserved worldwide"))
               .otherwise(lit(""))).as("text")),
-        "source", "text", n = 3, minDocs = 10L)
+        "source", "text", minDocs = 10L)
     }),
       """WITH aug AS (
         |  SELECT doc_id, source,

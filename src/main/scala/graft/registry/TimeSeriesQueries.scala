@@ -28,7 +28,7 @@ private[graft] object TimeSeriesQueries {
 
     QuerySpec("q22_evt_sessionize", ((s, dir) => {
       Sessionize.sessionSummary(t(s, dir, "events"), "user_id", "ts",
-          "value", gapSeconds = 1800, tieCols = Seq("event_id"))
+          "value", gapSeconds = 1800)
         .orderBy(col("user_id"), col("session_seq"))
     }),
       """WITH flagged AS (
@@ -235,7 +235,7 @@ private[graft] object TimeSeriesQueries {
       // 3 sigma OF THEIR SLOT are flagged — "is 3 AM traffic weird for
       // 3 AM". Profile is types x 24 rows, broadcast back.
       operators.TimeSeries.seasonalAnomalies(t(s, dir, "events"),
-          "event_type", "ts", z = 3.0)
+          "event_type", "ts")
         .orderBy(col("key"), col("hour"))
     }),
       """WITH base AS MATERIALIZED (
@@ -270,7 +270,7 @@ private[graft] object TimeSeriesQueries {
       // prefix-min window identity over EXACT decimals — catches
       // sustained drifts the per-hour 3-sigma gate (q158) never trips.
       operators.TimeSeries.cusumChangepoints(t(s, dir, "events"),
-          "event_type", "ts", slack = 0.5, threshold = 4.0)
+          "event_type", "ts")
         .orderBy(col("key"), col("hour"))
     }),
       """WITH base AS MATERIALIZED (
@@ -319,7 +319,7 @@ private[graft] object TimeSeriesQueries {
       // out map-side to the days they cover (bounded explode), then one
       // (user, day) distinct — no per-day rescan, no range self-join.
       operators.TimeSeries.activeUsers(t(s, dir, "events"), "ts",
-          "user_id", window = 7)
+          "user_id")
         .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
           col("dau"), col("wau"), col("stickiness"))
         .orderBy(col("day"))
@@ -350,7 +350,7 @@ private[graft] object TimeSeriesQueries {
       operators.TimeSeries.kaplanMeierRetention(
         ev.select(concat_ws(":", col("user_id"), col("event_type"))
           .as("unit"), col("ts")),
-        "unit", "ts", censorDays = 7)
+        "unit", "ts")
         .orderBy(col("t_days"))
     }),
       """WITH per AS MATERIALIZED (
@@ -514,7 +514,7 @@ private[graft] object TimeSeriesQueries {
       // dashboard publishes; one user-keyed session pass then a 5-number
       // global aggregate.
       val ss = Sessionize.sessionSummary(t(s, dir, "events"), "user_id",
-        "ts", "value", gapSeconds = 1800, tieCols = Seq("event_id"))
+        "ts", "value", gapSeconds = 1800)
       ss.select(
           (unix_timestamp(col("session_end"))
             - unix_timestamp(col("session_start"))).as("dur_s"),
@@ -565,7 +565,7 @@ private[graft] object TimeSeriesQueries {
       // exact integer arithmetic with ONE double division — no float
       // recurrence, no evaluation-order sensitivity.
       operators.TimeSeries.ewmaHourly(t(s, dir, "events"), "event_type",
-        "ts", window = 24)
+        "ts")
     }),
       """WITH hourly AS MATERIALIZED (
         |  SELECT event_type AS key, date_trunc('hour', ts) AS hour,

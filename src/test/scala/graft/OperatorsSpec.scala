@@ -78,8 +78,8 @@ class OperatorsSpec extends SparkSpec {
   test("minhash LSH finds the near-dup pair and the exact-dup pair") {
     // bands=16 (one row per band) makes candidate generation deterministic
     // for any pair sharing a single minhash — right for a 5-doc test
-    val pairs = Dedup.minhashLshPairs(docsDf, "doc_id", "text",
-        k = 16, bands = 16, shingleN = 3, threshold = 0.5, fast = true)
+    val pairs = Dedup.minhashLshPairs(docsDf, "doc_id", "text", bands = 16,
+        threshold = 0.5, fast = true)
       .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
     assert(pairs.contains((0L, 3L))) // exact dup always collides
     assert(pairs.contains((0L, 1L)) || pairs.contains((1L, 3L))) // near-dup
@@ -157,8 +157,8 @@ class OperatorsSpec extends SparkSpec {
       (1L, at(90), 3.0, 102L),                       // new session (80m gap)
       (2L, at(5), 4.0, 103L)
     ).toDF("user_id", "ts", "value", "event_id")
-    val sess = Sessionize.sessionSummary(ev, "user_id", "ts", "value", 1800,
-      Seq("event_id")).collect()
+    val sess = Sessionize.sessionSummary(ev, "user_id", "ts", "value", 1800)
+      .collect()
     val byKey = sess.map(r => (r.getAs[Long]("user_id"),
       r.getAs[Long]("session_seq")) -> r.getAs[Long]("n_events")).toMap
     assert(byKey((1L, 1L)) == 2 && byKey((1L, 2L)) == 1 && byKey((2L, 1L)) == 1)
@@ -214,7 +214,7 @@ class OperatorsSpec extends SparkSpec {
       (4L, "completely different content about databases and storage"))
       .toDF("doc_id", "text")
     val pairs = graft.operators.Dedup
-      .simhashNearDupPairs(docs, "doc_id", "text", maxHamming = 3)
+      .simhashNearDupPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 0L))
     // every returned pair respects the threshold
@@ -267,7 +267,7 @@ class OperatorsSpec extends SparkSpec {
       (2L, "p q r s t u v"),
       (3L, "a b c d e f m n")).toDF("doc_id", "text")
     val got = graft.operators.TextAnalysis
-      .spanDedup(docs, "doc_id", "text", n = 3, minOcc = 2)
+      .spanDedup(docs, "doc_id", "text", n = 3)
       .orderBy("doc_id")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3),
@@ -275,17 +275,6 @@ class OperatorsSpec extends SparkSpec {
     assert(got.toSeq == Seq(
       (1L, 1L, 6L, "9:14", "a b c d e f x y z"),
       (3L, 1L, 6L, "0:5", "m n")))
-  }
-
-  test("spanDedup hashKeys (8-byte shuffle keys) matches the string-key form") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def run(hk: Boolean) = graft.operators.TextAnalysis
-      .spanDedup(docs, "doc_id", "text", n = 6, minOcc = 2, hashKeys = hk)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3),
-        r.getString(4))).toSet
-    val strKeys = run(false)
-    assert(strKeys.nonEmpty && run(true) == strKeys)
   }
 
   test("quantizeInt8: symmetric int8 codes, zero-vector safe") {
@@ -358,8 +347,8 @@ class OperatorsSpec extends SparkSpec {
     def recall(df: org.apache.spark.sql.DataFrame): Double =
       df.select("query_id", "neighbor_id").intersect(gt).count() / gtN
 
-    val single = recall(Similarity.lshTopK(emb, queries, k = 5, planes = 8))
-    val multi = recall(Similarity.lshTopK(emb, queries, k = 5, planes = 8,
+    val single = recall(Similarity.lshTopK(emb, queries, k = 5))
+    val multi = recall(Similarity.lshTopK(emb, queries, k = 5,
       probeBits = 1))
     assert(multi >= single, s"multi-probe $multi < single-probe $single")
     assert(multi >= 0.70, s"multi-probe recall@5 $multi below target")
@@ -416,13 +405,15 @@ class OperatorsSpec extends SparkSpec {
     // IVF-PQ: coarse pruning on top of the same codebooks — same
     // right-region guarantee, and raising nprobe can only add candidates
     val seeds = emb.filter(col("vec_id") % 20 === 0)
-    val ivfpq = Similarity.ivfPqTopK(emb, queries, seeds, cb, k = 5,
+    val index = graft.operators.Materializer.Local(
+      Similarity.ivfPqIndex(emb, seeds, cb))
+    val ivfpq = Similarity.ivfPqSearch(index, queries, seeds, cb, k = 5,
       nprobe = 3)
     val sameCell = ivfpq
       .filter(expr("neighbor_id div 20 = query_id div 20")).count().toDouble
     assert(sameCell / ivfpq.count() >= 0.9,
       s"IVF-PQ same-cluster fraction ${sameCell / ivfpq.count()} low")
-    val n1 = Similarity.ivfPqTopK(emb, queries, seeds, cb, k = 5).count()
+    val n1 = Similarity.ivfPqSearch(index, queries, seeds, cb, k = 5).count()
     assert(ivfpq.count() >= n1) // nprobe=3 candidate pool is a superset
     // a (query, neighbor) pair never duplicates under multi-probe
     assert(ivfpq.groupBy("query_id", "neighbor_id").count()
@@ -757,7 +748,9 @@ class OperatorsSpec extends SparkSpec {
     def toSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val inMem = toSet(
-      Similarity.ivfPqTopK(emb, qs, seeds, cb, k = 5, nprobe = 2))
+      Similarity.ivfPqSearch(graft.operators.Materializer.Local(
+        Similarity.ivfPqIndex(emb, seeds, cb)), qs, seeds, cb, k = 5,
+        nprobe = 2))
     val s2 = spark.newSession()
     val emb2 = s2.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val fromDisk = Similarity.ivfPqSearch(
@@ -814,7 +807,7 @@ class OperatorsSpec extends SparkSpec {
     val flags = hashes.collect()
       .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(flags(199L) == false && flags.count(_._2) == 4)
-    val pairs = Dedup.imageNearDupPairs(hashes, maxHamming = 3)
+    val pairs = Dedup.imageNearDupPairs(hashes)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(pairs((0L, 75L)) == 0L)
     assert(pairs((0L, 25L)) == 1L && pairs((25L, 75L)) == 1L)
@@ -925,12 +918,11 @@ class OperatorsSpec extends SparkSpec {
       "u", "p"))
   }
 
-  test("boilerplateStats flags corpus-frequent passages; hash keys agree") {
+  test("boilerplateStats flags corpus-frequent passages") {
     // docs 0, 1, 3 share the longA/longB spine: every 3-gram common to
     // all three has df >= 3 and is boilerplate at minDf = 3; doc 2 shares
     // nothing. The exact dup pair (0, 3) must report identical stats.
-    val got = TextAnalysis.boilerplateStats(docsDf, "doc_id", "text",
-        n = 3, minDf = 3)
+    val got = TextAnalysis.boilerplateStats(docsDf, "doc_id", "text", minDf = 3)
       .orderBy("doc_id").collect()
     assert(got.length == 5)
     val byId = got.map(r => r.getLong(0) ->
@@ -942,11 +934,6 @@ class OperatorsSpec extends SparkSpec {
     // longA vs longB differ in one token -> the 3 shingles spanning it are
     // not shared by doc 1, so doc 0's frequent count is distinct - 3
     assert(byId(0L)._2 == byId(0L)._1 - 3)
-    // production keying on xxhash64(shingle) must not change any row
-    val hashed = TextAnalysis.boilerplateStats(docsDf, "doc_id", "text",
-        n = 3, minDf = 3, hashKeys = true)
-      .orderBy("doc_id").collect()
-    assert(hashed.toSeq == got.toSeq)
   }
 
   test("tfidfTopTerms ranks by (tf desc, df asc, term) with exact values") {
@@ -1177,11 +1164,9 @@ class OperatorsSpec extends SparkSpec {
     val dim = Seq((1L, "hot"), (2L, "cold"), (3L, "unused")).toDF("k", "name")
     val plain = fact.join(dim, Seq("k")).select("k", "v", "name")
       .collect().map(_.toSeq).sortBy(_.toString)
-    val salted = graft.operators.Skew.saltedJoin(fact, dim, "k", salts = 8)
+    val salted = graft.operators.Skew.saltedJoin(fact, dim, "k")
       .select("k", "v", "name").collect().map(_.toSeq).sortBy(_.toString)
     assert(salted.toSeq == plain.toSeq)
-    val profile = graft.operators.Skew.keyProfile(fact, "k").collect()
-    assert(profile(0).getLong(0) == 1L && profile(0).getDouble(2) == 0.9)
   }
 
   test("multimodal features: real ImageIO/WAV/AVI decode for all modalities") {
@@ -1304,7 +1289,7 @@ class OperatorsSpec extends SparkSpec {
       (13L, Seq(0.0f, 1.0f, 0.0f))   // orthogonal: survives any bucket
     ).toDF("vec_id", "embedding")
     val drops = Dedup.semanticDedupDrops(embs, "vec_id", "embedding",
-        planes = 4, threshold = 0.9, exact = true)
+        planes = 4, threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(drops == Set((11L, 10L, 1L), (12L, 10L, 2L)))
   }
@@ -1379,8 +1364,7 @@ class OperatorsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // bigrams: doc0 (a,b)x2 (b,a)x1; doc1 (a,b)x1. c2(a,b)=3, c2(b,a)=1;
     // c1(a)=3, c1(b)=1; V = |{a,b,z}| = 3, alpha = 0.5
-    val got = TextAnalysis.bigramSurprisal(docs, "doc_id", "text",
-        alpha = 0.5)
+    val got = TextAnalysis.bigramSurprisal(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSeq
     def r6(x: Double) = BigDecimal(x)
@@ -1430,14 +1414,12 @@ class OperatorsSpec extends SparkSpec {
       (3L, Seq(0.0f, 1.0f), 1),
       (4L, Seq(-1.0f, 0.0f), 2)
     ).toDF("vec_id", "embedding", "label")
-    for (exact <- Seq(true, false)) {
-      val r = Similarity.hardNegativesTopK(embs,
-          embs.filter(col("vec_id") === 0), k = 2, exact = exact)
-        .orderBy("rk").collect()
-        .map(x => (x.getLong(x.fieldIndex("neighbor_id")),
-          x.getInt(x.fieldIndex("rk"))))
-      assert(r.toSeq == Seq((2L, 1), (3L, 2)), s"exact=$exact")
-    }
+    val r = Similarity.hardNegativesTopK(embs,
+        embs.filter(col("vec_id") === 0), k = 2)
+      .orderBy("rk").collect()
+      .map(x => (x.getLong(x.fieldIndex("neighbor_id")),
+        x.getInt(x.fieldIndex("rk"))))
+    assert(r.toSeq == Seq((2L, 1), (3L, 2)))
   }
 
   test("semanticContamination flags cosine hits with the best eval match") {
@@ -1455,7 +1437,7 @@ class OperatorsSpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val evalSet = embs.filter(col("vec_id") < 2)
     val r = Dedup.semanticContamination(embs, evalSet, "vec_id",
-        "embedding", threshold = 0.95, exact = true)
+        "embedding", threshold = 0.95)
       .filter(col("id") >= 10)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         x.getDouble(3))).toSet
@@ -1623,7 +1605,7 @@ class OperatorsSpec extends SparkSpec {
       (0L, longA), (1L, longA),              // identical -> all chunks dup
       (2L, longB), (3L, ""), (4L, "abc")     // empty + shorter-than-window
     ).toDF("doc_id", "text")
-    val ch = TextAnalysis.cdcChunks(df, "doc_id", "text", w = 8)
+    val ch = TextAnalysis.cdcChunks(df, "doc_id", "text")
       .orderBy("id", "chunk_id").collect()
     val texts = Map(0L -> longA, 1L -> longA, 2L -> longB, 3L -> "", 4L -> "abc")
     // per doc: chunks start at 1, abut (start+len = next start), cover len
@@ -1745,7 +1727,7 @@ class OperatorsSpec extends SparkSpec {
     val flags = hashes.collect()
       .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(flags(199L) == false && flags.count(_._2) == 4)
-    val pairs = Dedup.audioNearDupPairs(hashes, maxHamming = 3)
+    val pairs = Dedup.audioNearDupPairs(hashes)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(pairs((0L, 75L)) == 0L)
     assert(pairs((0L, 25L)) == 1L && pairs((25L, 75L)) == 1L)
@@ -1781,7 +1763,7 @@ class OperatorsSpec extends SparkSpec {
     val flags = hashes.collect()
       .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(flags(199L) == false && flags.count(_._2) == 4)
-    val pairs = Dedup.videoNearDupPairs(hashes, maxHamming = 3)
+    val pairs = Dedup.videoNearDupPairs(hashes)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(pairs((0L, 75L)) == 0L)
     assert(pairs((0L, 25L)) == 1L && pairs((25L, 75L)) == 1L)
@@ -1993,7 +1975,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq((1L, "x x y"), (2L, "x z"), (3L, "z"))
       .toDF("doc_id", "text")
     val got = graft.operators.Retrieval
-      .bm25(df, "doc_id", "text", Seq("x", "y"), k1 = 1.2, b = 0.75,
+      .bm25(df, "doc_id", "text", Seq("x", "y"),
         topN = 3)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
         r.getDouble(3))).toSeq
@@ -2032,7 +2014,7 @@ class OperatorsSpec extends SparkSpec {
     import s.implicits._
     val l1 = Seq((10L, 1), (20L, 2)).toDF("doc_id", "rk")
     val l2 = Seq((20L, 1), (30L, 2)).toDF("doc_id", "rk")
-    val got = graft.operators.Retrieval.rrfFuse(Seq(l1, l2), c = 60,
+    val got = graft.operators.Retrieval.rrfFuse(Seq(l1, l2),
         topN = 3)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
         r.getDouble(3))).toSeq
@@ -2058,7 +2040,7 @@ class OperatorsSpec extends SparkSpec {
       (6L, "zzzzzz")   // unrelated
     ).toDF("id", "str")
     val got = graft.operators.EditJoin
-      .editDistancePairs(df, "id", "str", maxDist = 1)
+      .editDistancePairs(df, "id", "str")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       .sortBy(t => (t._1, t._2)).toSeq
     // (2,3)/(2,4)/(3,4) differ by 2 edits; only the base pairs survive
@@ -2096,7 +2078,7 @@ class OperatorsSpec extends SparkSpec {
       if ai < bi && lev(as, bs) <= 1
     } yield (ai, bi)).toSet
     val got = graft.operators.EditJoin
-      .editDistancePairs(rows.toDF("id", "str"), "id", "str", maxDist = 1)
+      .editDistancePairs(rows.toDF("id", "str"), "id", "str")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == expected)
     assert(expected.nonEmpty) // the fixture really exercises the operator
@@ -2385,7 +2367,7 @@ class OperatorsSpec extends SparkSpec {
         ("k", java.sql.Timestamp.valueOf(f"2024-03-${d + 1}%02d 03:10:00")))
     }
     val got = graft.operators.TimeSeries
-      .seasonalAnomalies(rows.toDF("k", "ts"), "k", "ts", z = 3.0)
+      .seasonalAnomalies(rows.toDF("k", "ts"), "k", "ts")
       .collect()
     assert(got.length == 1)
     assert(got(0).getLong(2) == 100L && got(0).getInt(3) == 3)
@@ -2406,8 +2388,7 @@ class OperatorsSpec extends SparkSpec {
       }
     }
     val got = graft.operators.TimeSeries
-      .cusumChangepoints(rows.toDF("k", "ts"), "k", "ts",
-        slack = 0.5, threshold = 4.0)
+      .cusumChangepoints(rows.toDF("k", "ts"), "k", "ts")
       .orderBy(col("hour")).collect()
     assert(got.length == 30)
     // replay Page's recurrence S <- max(0, S + z - k) sequentially over
@@ -2435,7 +2416,7 @@ class OperatorsSpec extends SparkSpec {
     // user 1 on days 1 and 5, user 2 on day 1 only
     val rows = Seq((1L, ts(1)), (1L, ts(1)), (1L, ts(5)), (2L, ts(1)))
     val got = graft.operators.TimeSeries
-      .activeUsers(rows.toDF("u", "ts"), "ts", "u", window = 7)
+      .activeUsers(rows.toDF("u", "ts"), "ts", "u")
       .orderBy(col("day"))
       .collect()
     assert(got.length == 2)
@@ -2524,7 +2505,7 @@ class OperatorsSpec extends SparkSpec {
     // bin 2: conf 0.2, acc 0.0 -> |gap| 0.2 on the other half
     val rows = Seq((0.8, true), (0.8, false), (0.2, false), (0.2, false))
     val got = graft.operators.Stats
-      .calibration(rows.toDF("p", "y"), "p", "y", bins = 10)
+      .calibration(rows.toDF("p", "y"), "p", "y")
       .orderBy(col("bucket")).collect()
     assert(got.length == 2)
     assert(got(0).getInt(0) == 2 && got(0).getDouble(2) == 0.2
@@ -2559,8 +2540,7 @@ class OperatorsSpec extends SparkSpec {
     val rows = Seq((1L, ts(1)), (1L, ts(11)), (2L, ts(1)), (2L, ts(21)),
       (3L, ts(5)), (3L, ts(28)), (4L, ts(1)), (4L, ts(30)))
     val got = graft.operators.TimeSeries
-      .kaplanMeierRetention(rows.toDF("u", "ts"), "u", "ts",
-        censorDays = 7)
+      .kaplanMeierRetention(rows.toDF("u", "ts"), "u", "ts")
       .orderBy(col("t_days")).collect()
     assert(got.length == 2)
     assert(got(0).getLong(0) == 10L && got(0).getLong(1) == 4L
@@ -2988,7 +2968,7 @@ class OperatorsSpec extends SparkSpec {
     val t1 = java.sql.Timestamp.valueOf("2024-01-01 11:30:00")
     val rows = Seq.fill(2)(("A", t0)) ++ Seq.fill(4)(("A", t1))
     val got = graft.operators.TimeSeries
-      .ewmaHourly(rows.toDF("k", "ts"), "k", "ts", window = 24)
+      .ewmaHourly(rows.toDF("k", "ts"), "k", "ts")
       .collect().map(r => r.getString(1) -> (r.getLong(2), r.getDouble(3)))
       .toMap
     // first hour: only itself in the window -> ewma = own count
@@ -3024,7 +3004,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, Array(-1f, -0.1f)), (4L, Array(-2f, -0.2f)))
       .toDF("vec_id", "embedding")
     val got = graft.operators.Similarity
-      .pcaTopComponent(df, "vec_id", "embedding", iters = 5)
+      .pcaTopComponent(df, "vec_id", "embedding")
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     assert(got(0) == 1.0)
     assert(math.abs(got(1) - 0.1) < 1e-4)
@@ -3476,7 +3456,7 @@ class OperatorsSpec extends SparkSpec {
       (5L, words(3, "f"))
     ).toDF("doc_id", "text")
     val got = graft.operators.TextAnalysis
-      .winnowingFingerprints(docs, "doc_id", "text", k = 4, w = 4)
+      .winnowingFingerprints(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
       .toSet
     def md5hex8(x: String) = MessageDigest.getInstance("MD5")
@@ -3543,8 +3523,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq((1L, "a b a b", true), (2L, "a b c", false),
       (3L, "a a", false), (4L, "z", false)).toDF("doc_id", "text", "tr")
     val got = graft.operators.TextAnalysis
-      .bigramCrossEntropy(df, "doc_id", "text", isTrain = $"tr",
-        alpha = 1.0)
+      .bigramCrossEntropy(df, "doc_id", "text", isTrain = $"tr")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
     assert(!got.contains(1L), "train docs are not scored")
@@ -3801,7 +3780,7 @@ class OperatorsSpec extends SparkSpec {
       (-1.0, true, 5L), (1.0, false, 5L))
     val df = rows.toDF("x1", "y", "n")
     val got = graft.operators.Stats
-      .logisticGdHist(df, Seq("x1"), "y", "n", rounds = 10, lr = 2.0)
+      .logisticGdHist(df, Seq("x1"), "y", "n", rounds = 10)
       .collect().head
     def rd(x: Double, sc: Int) = BigDecimal(x)
       .setScale(sc, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -3839,7 +3818,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, true, 1L, 1L), (3L, false, 0L, 1L))
       .toDF("t", "x", "deaths", "total")
     val got = graft.operators.Stats
-      .coxNewtonBinary(hist, "t", "x", "deaths", "total", rounds = 4)
+      .coxNewtonBinary(hist, "t", "x", "deaths", "total")
       .collect().head
     def rd(x: Double, sc: Int) = BigDecimal(x)
       .setScale(sc, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -4389,7 +4368,7 @@ class OperatorsSpec extends SparkSpec {
       (i, base.toSeq)
     }.toDF("vec_id", "embedding")
     val g = graft.operators.Similarity
-      .nnDescentGraph(pts, k = 5, rounds = 2, spaces = 3,
+      .nnDescentGraph(pts, k = 5, rounds = 2,
         bucketTarget = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3)))
@@ -4419,7 +4398,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, "zeta xylo qumquat verdant echoes murmur beneath glacial"),
       (4L, dup)).toDF("doc_id", "text")
     val r = graft.operators.TextAnalysis
-      .minKSurprisal(rows, "doc_id", "text", alpha = 0.5, kFrac = 5)
+      .minKSurprisal(rows, "doc_id", "text")
       .collect().map(x => x.getLong(0) ->
         ((x.getLong(1), x.getLong(2), x.getDouble(3), x.getDouble(4))))
       .toMap
@@ -4464,20 +4443,20 @@ class OperatorsSpec extends SparkSpec {
     // A beats B 7-3: BT closed form s_A/(s_A+s_B)=0.7, mean-1 norm →
     // (1.4, 0.6), a fixed point of the MM update (round 2+ must not move)
     val g2 = Seq(("A", "B", 10L, 7L, 3L)).toDF("i", "j", "n", "wi", "wj")
-    val r2 = graft.operators.Stats.bradleyTerry(g2, rounds = 3)
+    val r2 = graft.operators.Stats.bradleyTerry(g2)
       .collect().map(r => r.getString(0) -> r.getDouble(3)).toMap
     assert(r2("A") == 1.4 && r2("B") == 0.6, s"closed form: $r2")
     // transitive sweep A>B>C with C winless: strengths order, C → 0
     val g3 = Seq(("A", "B", 2L, 2L, 0L), ("B", "C", 2L, 2L, 0L),
       ("A", "C", 2L, 2L, 0L)).toDF("i", "j", "n", "wi", "wj")
-    val r3 = graft.operators.Stats.bradleyTerry(g3, rounds = 3)
+    val r3 = graft.operators.Stats.bradleyTerry(g3)
       .collect().map(r => r.getString(0) -> r.getDouble(3)).toMap
     assert(r3("A") > r3("B") && r3("B") > r3("C"), s"order: $r3")
     assert(r3("C") == 0.0, s"winless floor: $r3")
     // BT is a ratio model: tripling every count leaves strengths fixed
     val g2x3 = Seq(("A", "B", 30L, 21L, 9L)).toDF("i", "j", "n", "wi",
       "wj")
-    val rScaled = graft.operators.Stats.bradleyTerry(g2x3, rounds = 3)
+    val rScaled = graft.operators.Stats.bradleyTerry(g2x3)
       .collect().map(r => r.getString(0) -> r.getDouble(3)).toMap
     assert(rScaled == r2, s"scale invariance: $rScaled vs $r2")
   }
@@ -4526,7 +4505,7 @@ class OperatorsSpec extends SparkSpec {
     assert(matchFrac("x x y z", "x x y z", 32) == 1.0)
     val ident = Dedup.weightedMinhashPairs(
       Seq((1L, "x x y z"), (2L, "x x y z")).toDF("doc_id", "text"),
-      "doc_id", "text", k = 8, bands = 4, thetaNum = 3, thetaDen = 5)
+      "doc_id", "text", k = 8, bands = 4)
       .collect()
     assert(ident.length == 1 && ident(0).getDouble(2) == 1.0)
     // CWS unbiasedness: P[collision] = Jw. A={x:4,y:4}, B={x:4,z:4} has
@@ -4545,7 +4524,7 @@ class OperatorsSpec extends SparkSpec {
     // must be exactly round(5/7, 6)
     val p = Dedup.weightedMinhashPairs(
       Seq((1L, "x x x y y z"), (2L, "x x x y y w")).toDF("doc_id", "text"),
-      "doc_id", "text", k = 64, bands = 32, thetaNum = 3, thetaDen = 5)
+      "doc_id", "text", k = 64, bands = 32)
       .collect()
     assert(p.length == 1 && p(0).getDouble(2) == 0.714286)
   }
@@ -4566,8 +4545,7 @@ class OperatorsSpec extends SparkSpec {
         .collect().map(r => (r.getInt(0), r.getLong(1),
           r.getInt(2), Option(r.get(3)).map(_.toString))).toSeq
     val batch = Retrieval.queryLikelihoodBatch(docs, "doc_id", "text",
-      Seq("hit" -> Seq("alpha"), "ghost" -> Seq("zzz_not_a_word")),
-      mu = 100.0, topN = 3)
+      Seq("hit" -> Seq("alpha"), "ghost" -> Seq("zzz_not_a_word")), topN = 3)
     val ghost = rows(batch.filter(col("q") === "ghost"))
     val singleGhost = rows(Retrieval.queryLikelihood(docs, "doc_id",
       "text", Seq("zzz_not_a_word"), mu = 100.0, topN = 3))
@@ -4596,12 +4574,12 @@ class OperatorsSpec extends SparkSpec {
         k = 16, bands = 4, shingleN = 3, fast = true))
     graft.operators.Materializer.Persisted(labTmp)(
       Dedup.nearDupClusters(Dedup.minhashLshPairs(evens, "doc_id", "text",
-        k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = true)))
+        bands = 4, threshold = 0.5, fast = true)))
     def labSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"))).toSet
     val full = labSet(Dedup.nearDupClusters(
-      Dedup.minhashLshPairs(docs, "doc_id", "text",
-        k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = true)))
+      Dedup.minhashLshPairs(docs, "doc_id", "text", bands = 4, threshold = 0.5,
+          fast = true)))
     // fresh session: separate registry/catalog/conf, same cluster
     val s2 = spark.newSession()
     val docs2 = s2.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -4816,8 +4794,7 @@ class OperatorsSpec extends SparkSpec {
     val docs = Seq((2, 100L), (2, 100L), (1, 50L), (0, 1000L))
       .toDF("tier", "toks")
     val out = graft.operators.Sampling
-      .curriculumPlan(docs, col("tier"), col("toks"), budget = 1000L,
-        nTiers = 4, maxEpochs = 4)
+      .curriculumPlan(docs, col("tier"), col("toks"), budget = 1000L)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5),
         if (r.isNullAt(6)) None else Some(r.getDouble(6)),
@@ -4876,7 +4853,7 @@ class OperatorsSpec extends SparkSpec {
       ("g", "aa aa aa aa aa aa aa aa"),
       ("g", null)).toDF("src", "text")
     val out = graft.operators.TextAnalysis
-      .entropyGate(docs, "src", "text", lowBits = 3.5)
+      .entropyGate(docs, "src", "text")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(3)))
     assert(out.toSeq == Seq(("g", 3L, 2L)))
   }
@@ -4926,7 +4903,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, "g2", "nothing shared here at all")).toDF(
       "doc_id", "grp", "text")
     val out = graft.operators.TextAnalysis
-      .repeatedSpanScrub(docs, "grp", "text", n = 3, minDocs = 4L)
+      .repeatedSpanScrub(docs, "grp", "text", minDocs = 4L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
     assert(out == Seq(
@@ -4941,7 +4918,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, "g", "aaa bbb ccc ddd"), (4L, "g", "aaa bbb ccc ddd"))
       .toDF("doc_id", "grp", "text")
     val ovOut = graft.operators.TextAnalysis
-      .repeatedSpanScrub(ov, "grp", "text", n = 3, minDocs = 4L)
+      .repeatedSpanScrub(ov, "grp", "text", minDocs = 4L)
       .collect().map(r => (r.getLong(3), r.getLong(4))).toSeq
     assert(ovOut == Seq((16L, 16L)),
       "both trigrams are heavy; coverage is the union = all 4 positions")
@@ -5022,8 +4999,7 @@ class OperatorsSpec extends SparkSpec {
     val df = docs.toDF("source", "text")
     val out = graft.operators.Sampling
       .temperatureMixture(df, "source",
-        graft.operators.TextAnalysis.tokenCount(col("text")),
-        sqrtLevels = Seq(0, 1, 2))
+        graft.operators.TextAnalysis.tokenCount(col("text")))
       .collect().map(r => (r.getDouble(0), r.getString(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSeq
     // expected values computed with the SAME arithmetic (sqrt chains,

@@ -210,7 +210,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = pairSet(spark.read.parquet(pairsDir))
     val full = pairSet(Dedup.minhashLshPairs(
       (batch1 ++ batch2).toDF("doc_id", "text"), "doc_id", "text",
-      k = 16, bands = 4, shingleN = 3, threshold = 0.5, fast = true))
+      bands = 4, threshold = 0.5, fast = true))
     assert(streamed.nonEmpty && streamed == full)
   }
 
@@ -368,7 +368,7 @@ class StreamingSpec extends SparkSpec {
     df.write.mode("overwrite").parquet(dir)
     val q = graft.operators.TextAnalysis
       .cdcChunks(spark.readStream.schema(df.schema).parquet(dir),
-        "doc_id", "text", w = 8, dupCounts = false)
+        "doc_id", "text", dupCounts = false)
       .writeStream.outputMode("append")
       .format("memory").queryName("cdc_stream_out").start()
     q.processAllAvailable(); q.stop()
@@ -378,7 +378,7 @@ class StreamingSpec extends SparkSpec {
           r.getString(4))).toSeq
     val got = rows(spark.table("cdc_stream_out"))
     val batch = rows(graft.operators.TextAnalysis
-      .cdcChunks(df, "doc_id", "text", w = 8, dupCounts = false))
+      .cdcChunks(df, "doc_id", "text", dupCounts = false))
     assert(got.nonEmpty && got == batch)
   }
 
@@ -662,7 +662,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.table("au_out").collect()
       .map(r => (r.getDate(0).toString, r.getLong(1))).toMap
     val batch = graft.operators.TimeSeries
-      .activeUsers(df, "ts", "u", window = 7)
+      .activeUsers(df, "ts", "u")
       .collect().map(r => (r.getDate(0).toString, r.getLong(2))).toMap
     // every day the batch operator reports must carry the identical WAU
     for ((d, w) <- batch) assert(streamed.get(d).contains(w), d)

@@ -130,9 +130,9 @@ object QualityClassifier {
 object NaiveBayes {
 
   /** The q63 deterministic split: first md5 hex char of the id below
-    * `hexMax` ⇒ train ('c' = 12/16 = 75%). */
-  def isTrain(id: Column, hexMax: String = "c"): Column =
-    substring(md5(id.cast("string")), 1, 1) < lit(hexMax)
+    * 'c' ⇒ train (12/16 = 75%). */
+  def isTrain(id: Column): Column =
+    substring(md5(id.cast("string")), 1, 1) < lit("c")
 
   /** Train on the md5-split train slice of `docs` and return the test
     * slice's confusion matrix (actual, predicted, n, share-of-actual) —

@@ -84,8 +84,6 @@ object Dedup {
                       bands: Int = 4,
                       threshold: Double = 0.5,
                       fast: Boolean = true): DataFrame = {
-    val k = 16
-    val shingleN = 3
     // Shingle sets and banded signatures are computed ONCE per document in
     // a single native pass (signature + banding fused — slicing a signature
     // column into bands would re-evaluate it per band); the candidate join
@@ -103,7 +101,7 @@ object Dedup {
     // natural thing to persist at scale anyway (Materializer.Persisted
     // exports it).
     val prepared = Materializer.Local(
-      minhashIndex(docs, idCol, textCol, k, bands, shingleN, fast))
+      minhashIndex(docs, idCol, textCol, bands, fast))
     // explode_outer, not explode: the band array is never empty, and plain
     // explode makes Catalyst infer a size(bandkeys)>0 scan filter that
     // re-evaluates the whole signature a second time per row.
@@ -134,8 +132,9 @@ object Dedup {
     * form a 100 TB corpus actually runs: the historical corpus is never
     * re-signatured, only its matching band buckets are touched. */
   def minhashIndex(docs: DataFrame, idCol: String, textCol: String,
-                   k: Int = 16, bands: Int = 4, shingleN: Int = 3,
-                   fast: Boolean = true): DataFrame = {
+                   bands: Int = 4, fast: Boolean = true): DataFrame = {
+    val k = 16
+    val shingleN = 3
     // CPU-bound signature stage: small corpora arrive as one input split,
     // so spread rows across the cluster first (at 100 TB the scan already
     // has enough splits; the repartition is a no-op cost-wise).
@@ -151,8 +150,8 @@ object Dedup {
     * (plus within the batch itself): returns every pair with at least one
     * new-side id — old-vs-old pairs never form, so the incremental run
     * shuffles only the new batch's bands and the index buckets they hit.
-    * `newIndex` and `index` must share the index parameters (k, bands,
-    * shingleN, fast). Pair ids are canonical (`a_id < b_id`), so a daily
+    * `newIndex` and `index` must share the index parameters (bands,
+    * fast). Pair ids are canonical (`a_id < b_id`), so a daily
     * pipeline can append the result to its confirmed-pair log and the new
     * index rows to the persisted index. */
   def minhashLshPairsIncremental(newIndex: DataFrame, index: DataFrame,
@@ -462,8 +461,8 @@ object Dedup {
     * split cannot prevent (a test document with a near-verbatim twin in
     * train is an eval leak even after exact dedup; Lee et al. 2022 §6).
     * Assignment hashes the cluster representative's id with the same
-    * md5-bucket idiom as the per-doc split (first hex char <
-    * `trainHexCutoff`, default 'c' = 12/16 = 75% train expected), so the
+    * md5-bucket idiom as the per-doc split ([[NaiveBayes.isTrain]]:
+    * first hex char < 'c' = 12/16 = 75% train expected), so the
     * split stays deterministic, engine-portable (no rand()), and stable
     * under re-sharding; because pair endpoints are by definition in one
     * component, the cluster-keyed split straddles zero pairs by
@@ -478,11 +477,10 @@ object Dedup {
     * projections. */
   def clusterAwareSplit(docs: DataFrame, pairs: DataFrame,
                         idCol: String): DataFrame = {
-    val trainHexCutoff = "c"
     // the ONE md5-bucket split rule (shared with NaiveBayes/q63), so the
     // per-doc and per-cluster assignments can never drift apart
     def splitOf(c: Column): Column =
-      when(NaiveBayes.isTrain(c, trainHexCutoff), lit("train"))
+      when(NaiveBayes.isTrain(c), lit("train"))
         .otherwise(lit("test"))
     val clusters = nearDupClusters(pairs)
       .withColumnRenamed("doc_id", "cs_id")
@@ -531,14 +529,13 @@ object Dedup {
   /** SimHash near-duplicate pairs: the 64-bit signature is split into 4
     * contiguous 16-bit blocks (4 hex chars each); candidate pairs share at
     * least one identical block, then verify with the exact Hamming
-    * distance. By pigeonhole, any pair within `maxHamming` <= 3 bits
+    * distance. By pigeonhole, any pair within `MaxHamming` = 3 bits
     * differs in at most 3 blocks, so block-equality candidates have
     * RECALL 1.0 — no probabilistic miss, unlike MinHash banding. Plan
     * shape matches the MinHash path: map-side signatures, equi-join on
     * (block index, block value), exact verify on candidates only. */
   def simhashNearDupPairs(docs: DataFrame, idCol: String,
                           textCol: String): DataFrame = {
-    val maxHamming = 3
     // (id, 16-char sig) is referenced three times (banding + both sides of
     // the verify re-attach); materialize it once so the md5-per-token
     // signature pass runs once over the corpus, not three times — the
@@ -550,19 +547,21 @@ object Dedup {
     val sig = Materializer.Local(
       FanOut(docs.select(col(idCol).as("id"), col(textCol).as("t_")))
         .select(col("id"), simhashHex(col("t_")).as("sig")))
-    bandedHammingPairs(sig, maxHamming)
+    bandedHammingPairs(sig)
   }
+
+  /** The Hamming distance at or under which the banded searches pair two
+    * 64-bit signatures. 4-block banding guarantees recall only up to 3. */
+  private val MaxHamming = 3
 
   /** The banded-Hamming pair search shared by SimHash text dedup and
     * perceptual-hash image dedup: `sig` is (id, 16-hex-char 64-bit
     * signature); the signature splits into 4 contiguous 16-bit blocks
     * (4 hex chars), candidate pairs share at least one identical block,
     * then the exact native Hamming verify runs on candidates only. By
-    * pigeonhole, any pair within `maxHamming` <= 3 differs in at most 3
+    * pigeonhole, any pair within `MaxHamming` = 3 differs in at most 3
     * blocks, so recall is 1.0 — no probabilistic miss. */
-  def bandedHammingPairs(sig: DataFrame, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3,
-      "4-block banding guarantees recall only for maxHamming <= 3")
+  def bandedHammingPairs(sig: DataFrame): DataFrame = {
     val banded = sig.select(col("id"),
       explode_outer(transform(sequence(lit(0), lit(3)),
         b => concat_ws("_", b.cast("string"),
@@ -580,7 +579,7 @@ object Dedup {
       .join(sig.select(col("id").as("b_id"), col("sig").as("b_sig")),
         Seq("b_id"))
       .withColumn("hamming", hammingHexStr(col("a_sig"), col("b_sig")))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= MaxHamming)
       .select(col("a_id"), col("b_id"), col("hamming"))
   }
 
@@ -591,10 +590,9 @@ object Dedup {
     * hashing are map-side `mapPartitions` work, the pair search shuffles
     * 8-byte signatures + ids only. */
   def imageNearDupPairs(hashes: DataFrame): DataFrame = {
-    val maxHamming = 3
     val sig = Materializer.Local(hashes.filter(col("decoded"))
       .select(col("doc_id").as("id"), col("dhash").as("sig")))
-    bandedHammingPairs(sig, maxHamming)
+    bandedHammingPairs(sig)
   }
 
   /** Audio near-duplicate pairs over an envelope-hash table
@@ -604,10 +602,9 @@ object Dedup {
     * Decode + hashing are map-side; the pair search shuffles 8-byte
     * signatures + ids only, never PCM. */
   def audioNearDupPairs(hashes: DataFrame): DataFrame = {
-    val maxHamming = 3
     val sig = Materializer.Local(hashes.filter(col("decoded"))
       .select(col("doc_id").as("id"), col("ahash").as("sig")))
-    bandedHammingPairs(sig, maxHamming)
+    bandedHammingPairs(sig)
   }
 
   /** Video near-duplicate pairs over a first-frame perceptual-hash table
@@ -617,10 +614,9 @@ object Dedup {
     * Decode + hashing are map-side; the pair search shuffles 8-byte
     * signatures + ids only, never frames. */
   def videoNearDupPairs(hashes: DataFrame): DataFrame = {
-    val maxHamming = 3
     val sig = Materializer.Local(hashes.filter(col("decoded"))
       .select(col("doc_id").as("id"), col("vhash").as("sig")))
-    bandedHammingPairs(sig, maxHamming)
+    bandedHammingPairs(sig)
   }
 
   /** Incremental banded-Hamming pairs: a NEW batch of (id, sig) rows
@@ -635,8 +631,6 @@ object Dedup {
     * day's new images, append confirmed pairs and the new index rows. */
   def bandedHammingPairsIncremental(newSig: DataFrame,
                                     sig: DataFrame): DataFrame = {
-    // 4-block banding guarantees recall only for maxHamming <= 3
-    val maxHamming = 3
     val fresh = Materializer.Local(newSig)
     val all = Materializer.Local(fresh.unionByName(sig))
     def banded(df: DataFrame): DataFrame = df.select(col("id"),
@@ -657,7 +651,7 @@ object Dedup {
       .join(all.select(col("id").as("b_id"), col("sig").as("b_sig")),
         Seq("b_id"))
       .withColumn("hamming", hammingHexStr(col("a_sig"), col("b_sig")))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= MaxHamming)
       .select(col("a_id"), col("b_id"), col("hamming"))
   }
 

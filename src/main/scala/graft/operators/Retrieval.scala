@@ -23,8 +23,8 @@ object Retrieval {
     * tokens that appear in `allTerms`. Exposed so a consumer running
     * SEVERAL rankers over the SAME corpus and query sets (q290 runs
     * BM25 + QLM) tokenizes the corpus ONCE and shares the materialized
-    * frame (r14, §2.4 fewer passes) — each batch ranker builds exactly
-    * this when not handed one. */
+    * frame (r14, §2.4 fewer passes) — both batch rankers take it as
+    * their input. */
   def trimmedPostings(docs: DataFrame, idCol: String, textCol: String,
                       allTerms: Seq[String]): DataFrame = {
     val toks = TextAnalysis.tokens(col(textCol))
@@ -153,28 +153,23 @@ object Retrieval {
     * accumulations, order-independent), INCLUDING the all-absent edge: a
     * label none of whose terms occur in the corpus keeps its rows via a
     * left join into the scalar table ((c0 NULL, nq 0) — exactly the
-    * single-query path's empty aggregate). */
-  def queryLikelihoodBatch(docs: DataFrame, idCol: String,
-                           textCol: String,
-                           queries: Seq[(String, Seq[String])], topN: Int = 20,
-                           postings: Option[DataFrame] = None)
+    * single-query path's empty aggregate). `postings` is
+    * [[trimmedPostings]], as for [[bm25Batch]]; Dirichlet mu = 100. */
+  def queryLikelihoodBatch(postings: DataFrame,
+                           queries: Seq[(String, Seq[String])], topN: Int)
       : DataFrame = {
     val mu = 100.0
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty) && topN > 0)
-    val allTerms = queries.flatMap(_._2).distinct
-    // caller-shared one-tokenize path — see [[bm25Batch]]
-    val dl = postings.getOrElse(
-      trimmedPostings(docs, idCol, textCol, allTerms))
-    val docLen = dl.groupBy(col("doc_id"))
+    val docLen = postings.groupBy(col("doc_id"))
       .agg(first(col("dl")).as("dl"))
     val totT = docLen.agg(sum(col("dl")).cast("long").as("tt"))
-    val cf = dl.filter(col("t").isNotNull).groupBy(col("t"))
+    val cf = postings.filter(col("t").isNotNull).groupBy(col("t"))
       .agg(count(lit(1)).cast("long").as("cf"))
     val pw = round(col("cf").cast("double") / col("tt").cast("double"),
       12)
     val cfp = Materializer.Local(cf.crossJoin(broadcast(totT))
       .select(col("t"), pw.as("pw")))
-    val sp0 = docs.sparkSession
+    val sp0 = postings.sparkSession
     import sp0.implicits._
     val lbl = queries.flatMap { case (q, ts) => ts.map(t => (q, t)) }
       .toDF("q", "t")
@@ -193,7 +188,7 @@ object Retrieval {
         Seq("q"), "left")
       .select(col("q"), col("c0"),
         coalesce(col("nq"), lit(0).cast("int")).as("nq"))
-    val tf = dl.filter(col("t").isNotNull)
+    val tf = postings.filter(col("t").isNotNull)
       .groupBy(col("doc_id"), col("t"))
       .agg(count(lit(1)).cast("double").as("tf"))
     val adj = tf.join(Hints.boundedBroadcast(cfp, "query_term_set"), Seq("t"))

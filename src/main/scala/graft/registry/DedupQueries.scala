@@ -348,9 +348,9 @@ private[graft] object DedupQueries {
       val docs = t(s, dir, "documents")
       Dedup.minhashLshPairsIncremental(
           Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
-            "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = false),
+            "doc_id", "text", bands = 4, fast = false),
           Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 0),
-            "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = false),
+            "doc_id", "text", bands = 4, fast = false),
           threshold = 0.5)
         .orderBy(col("a_id"), col("b_id"))
     }),
@@ -410,11 +410,11 @@ private[graft] object DedupQueries {
         s".bench/q70_index_${corpusKey(dir)}").getAbsolutePath
       val idxPath = ensurePersistedIndex(idxDir, docs.count()) {
         Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = true)
+          "doc_id", "text", bands = 4, fast = true)
       }
       Dedup.minhashLshPairsIncremental(
           Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
-            "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = true),
+            "doc_id", "text", bands = 4, fast = true),
           s.read.parquet(idxPath), threshold = 0.5)
         .orderBy(col("a_id"), col("b_id"))
     }),
@@ -483,9 +483,9 @@ private[graft] object DedupQueries {
       val srcNum = expr("int(substring(source, 4))")
       Dedup.fuzzyJoin(
           Dedup.minhashIndex(docs.filter(srcNum < 10),
-            "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = false),
+            "doc_id", "text", bands = 4, fast = false),
           Dedup.minhashIndex(docs.filter(srcNum >= 10),
-            "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = false),
+            "doc_id", "text", bands = 4, fast = false),
           threshold = 0.3)
         .orderBy(col("left_id"), col("right_id"))
     }),
@@ -547,7 +547,7 @@ private[graft] object DedupQueries {
       val nRows = docs.count()
       val idxPath = ensurePersistedIndex(idxDir, nRows) {
         Dedup.minhashIndex(evens, "doc_id", "text",
-          k = 16, bands = 4, shingleN = 3, fast = true)
+          bands = 4, fast = true)
       }
       val labDir = new java.io.File(s".bench/q108_labels_$key").getAbsolutePath
       val labPath = ensurePersistedIndex(labDir, nRows) {
@@ -556,7 +556,7 @@ private[graft] object DedupQueries {
       }
       val newPairs = Dedup.minhashLshPairsIncremental(
         Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = true),
+          "doc_id", "text", bands = 4, fast = true),
         s.read.parquet(idxPath), threshold = 0.5)
       Dedup.nearDupClustersIncremental(s.read.parquet(labPath), newPairs)
         .orderBy(col("doc_id"))

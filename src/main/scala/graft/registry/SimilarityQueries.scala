@@ -1391,8 +1391,8 @@ private[graft] object SimilarityQueries {
         "text", sets.flatMap(_._2).distinct)
       val a = operators.Retrieval.bm25Batch(shared, sets)
         .select(col("q"), col("doc_id"), col("rk").as("ra"))
-      val b = operators.Retrieval.queryLikelihoodBatch(docs, "doc_id",
-          "text", sets, topN = 10, postings = Some(shared))
+      val b = operators.Retrieval.queryLikelihoodBatch(shared, sets,
+          topN = 10)
         .select(col("q"), col("doc_id"), col("rk").as("rb"))
       val w = rboWeights.toDF("m", "c")
       a.join(b, Seq("q", "doc_id"))

@@ -4544,8 +4544,9 @@ class OperatorsSpec extends SparkSpec {
       df.select(col("rk"), col("doc_id"), col("n_match"), col("score"))
         .collect().map(r => (r.getInt(0), r.getLong(1),
           r.getInt(2), Option(r.get(3)).map(_.toString))).toSeq
-    val batch = Retrieval.queryLikelihoodBatch(docs, "doc_id", "text",
-      Seq("hit" -> Seq("alpha"), "ghost" -> Seq("zzz_not_a_word")), topN = 3)
+    val labels = Seq("hit" -> Seq("alpha"), "ghost" -> Seq("zzz_not_a_word"))
+    val batch = Retrieval.queryLikelihoodBatch(Retrieval.trimmedPostings(
+      docs, "doc_id", "text", labels.flatMap(_._2).distinct), labels, topN = 3)
     val ghost = rows(batch.filter(col("q") === "ghost"))
     val singleGhost = rows(Retrieval.queryLikelihood(docs, "doc_id",
       "text", Seq("zzz_not_a_word"), mu = 100.0, topN = 3))
@@ -4571,7 +4572,7 @@ class OperatorsSpec extends SparkSpec {
     val labTmp = java.nio.file.Files.createTempDirectory("graft_q108l").toString
     graft.operators.Materializer.Persisted(idxTmp)(
       Dedup.minhashIndex(evens, "doc_id", "text",
-        k = 16, bands = 4, shingleN = 3, fast = true))
+        bands = 4, fast = true))
     graft.operators.Materializer.Persisted(labTmp)(
       Dedup.nearDupClusters(Dedup.minhashLshPairs(evens, "doc_id", "text",
         bands = 4, threshold = 0.5, fast = true)))
@@ -4585,7 +4586,7 @@ class OperatorsSpec extends SparkSpec {
     val docs2 = s2.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val newPairs = Dedup.minhashLshPairsIncremental(
       Dedup.minhashIndex(docs2.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text", k = 16, bands = 4, shingleN = 3, fast = true),
+        "doc_id", "text", bands = 4, fast = true),
       s2.read.parquet(s"$idxTmp/mat_0"), threshold = 0.5)
     val merged = labSet(Dedup.nearDupClustersIncremental(
       s2.read.parquet(s"$labTmp/mat_0"), newPairs))

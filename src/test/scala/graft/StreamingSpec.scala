@@ -194,7 +194,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.foreachBatch {
         (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           val bIdx = Dedup.minhashIndex(batch, "doc_id", "text",
-            k = 16, bands = 4, shingleN = 3, fast = true)
+            bands = 4, fast = true)
           val old =
             if (new java.io.File(idxDir).exists) spark.read.parquet(idxDir)
             else bIdx.limit(0)

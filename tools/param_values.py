@@ -8,7 +8,9 @@ For every defaulted parameter of a `def` under the directory, the
 effective value at each call site is the argument text the call passes
 (positional or named, whitespace collapsed), or the default when the
 call passes nothing. A call that forwards a variable counts that
-variable's name as its value. Call sites are `Obj.name(` anywhere, where
+variable's name as its value, unless the last `val` of that name before
+the call in the same file binds a literal (`val maxHamming = 3`): then
+the literal is the value. Call sites are `Obj.name(` anywhere, where
 `Obj` is the object or class the def sits in, and a bare `name(` in the
 def's own file. Main call sites are those in `src/main` and
 `perfbench/src`; test call sites those in `src/test`.
@@ -226,6 +228,27 @@ def parse_defs(path):
     return defs
 
 
+LITERAL_RE = re.compile(r'-?[0-9][0-9_]*(\.[0-9]+)?[LlDdFf]?|true|false|"[^"\\\n]*"')
+IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*$")
+
+
+def resolve_local(code, pos, value):
+    """value, or the literal that the last `val <value> = ...` before pos
+    binds when value is a bare name and that binding is one literal."""
+    if not IDENT_RE.match(value) or value in ("true", "false"):
+        return value
+    last = None
+    val_re = re.compile(r"\bval\s+" + re.escape(value) +
+                        r"\s*(?::[^=\n]*)?=(?![=>])([^\n]*)")
+    for m in val_re.finditer(code, 0, pos):
+        last = m
+    if last is not None:
+        rhs = last.group(1).strip()
+        if LITERAL_RE.fullmatch(rhs):
+            return rhs
+    return value
+
+
 def call_values(d, code, in_str, lo_call):
     """Effective values of d's defaulted parameters at the call whose
     argument groups start at code[lo_call]; None if it is no call."""
@@ -242,9 +265,9 @@ def call_values(d, code, in_str, lo_call):
             for k, arg in enumerate(split_top(code, in_str, lo, hi)):
                 m = re.match(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*=(?![=>])", arg)
                 if m and m.group(1) in names:
-                    given[m.group(1)] = norm(arg[m.end():])
+                    given[m.group(1)] = resolve_local(code, lo, norm(arg[m.end():]))
                 elif k < len(names):
-                    given[names[k]] = norm(arg)
+                    given[names[k]] = resolve_local(code, lo, norm(arg))
         for p, dflt in ps:
             if dflt is not None:
                 vals[(li, p)] = given.get(p, dflt)

@@ -7,11 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.create("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // optional regex subset for local iteration (the driver sets none)
-    val filter = sys.env.get("SPARK_GRAFT_VERIFY_FILTER")
-    SparkEntry.queries
-      .filter { case (name, _) => filter.forall(name.matches) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -26,10 +26,11 @@ object AsOfJoin {
     * tie-break), making the join DETERMINISTIC under retries/AQE even when
     * the right stream has same-instant rows. Without it, equal-ts right
     * rows are picked in window arrival order. */
-  def asofJoin(left: DataFrame, right: DataFrame, key: String,
+  def asofJoin(left: DataFrame, right: DataFrame,
                leftTs: String, rightTs: String,
                valueCols: Seq[String],
                rightTieBreak: Option[String] = None): DataFrame = {
+    val key = "user_id"
     val payload = left.columns.filterNot(c => c == key || c == leftTs).toSeq
     def nul(df: DataFrame, c: String): Column =
       lit(null).cast(df.schema(c).dataType)

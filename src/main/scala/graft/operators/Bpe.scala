@@ -24,8 +24,9 @@ object Bpe {
   /** Train a BPE merge table: `nMerges` (left, right) pairs in rank
     * order. Deterministic — the most frequent adjacent symbol pair wins
     * each round, ties broken by (left, right) lexicographic ascending. */
-  def train(docs: DataFrame, textCol: String, nMerges: Int)
+  def train(docs: DataFrame, nMerges: Int)
       : Seq[(String, String)] = {
+    val textCol = "text"
     val vocabHead = 10000
     require(nMerges >= 0)
     val wc = docs
@@ -115,8 +116,8 @@ object Bpe {
     * chars joined by a separator, then one `replace` per merge in rank
     * order (replace == a left-to-right non-overlapping merge pass).
     * Returns a SQL expression counting subwords of one word `expr`. */
-  def replaySqlTokenCount(wordExpr: String,
-                          merges: Seq[(String, String)]): String = {
+  def replaySqlTokenCount(merges: Seq[(String, String)]): String = {
+    val wordExpr = "word"
     // chr(1) separates symbols; a word never contains it (corpus text is
     // whitespace-tokenized printable text)
     val charsSep =

@@ -28,11 +28,13 @@ import org.apache.spark.sql.functions._
   * is tiny and convex.
   */
 object QualityClassifier {
+  private val TextCol = "text"
 
   /** The feature vector: [bias, length score, punct ratio, stopword
     * ratio, English-profile hit ratio] — every component mirrors a
     * fragment already pinned by the q31/q32 oracles. */
-  def features(text: Column): Seq[Column] = {
+  def features: Seq[Column] = {
+    val text = col(TextCol)
     val toks = TextAnalysis.tokens(text)
     val enProfile = TextAnalysis.langProfiles.toMap.apply("en")
     val enRatio = when(size(toks) === 0, lit(0.0)).otherwise(
@@ -64,9 +66,10 @@ object QualityClassifier {
     * iteration scans numbers, not text (unmaterialized, every iteration
     * re-runs the regex/tokenize feature projection over the corpus:
     * measured 26.7 → 3.0 s at sf0.1 for 32 iterations). */
-  def trainLogReg(docs: DataFrame, textCol: String, label: Column,
-                  iters: Int = 8, eta: Double = 1.0): Array[Double] = {
-    val xs = features(col(textCol))
+  def trainLogReg(docs: DataFrame, label: Column,
+                  iters: Int = 8): Array[Double] = {
+    val eta: Double = 8.0
+    val xs = features
     val base = Materializer.Local(
       docs.select((xs :+ label.cast("double").as("y"))
         .zipWithIndex.map { case (c, j) =>
@@ -91,11 +94,13 @@ object QualityClassifier {
     * projection, weights as plan literals. Returns
     * (id, p quality probability, [extra...], pred); `extra` columns pass
     * through the projection (e.g. the ground-truth label for a gate). */
-  def score(docs: DataFrame, idCol: String, textCol: String,
-            w: Array[Double], extra: Seq[Column] = Nil): DataFrame =
+  def score(docs: DataFrame,
+            w: Array[Double], extra: Seq[Column] = Nil): DataFrame = {
+    val idCol = "doc_id"
     docs.select(Seq(col(idCol).as("id"),
-      round(sigmoid(dot(w, features(col(textCol)))), 6).as("p")) ++ extra: _*)
+      round(sigmoid(dot(w, features)), 6).as("p")) ++ extra: _*)
       .withColumn("pred", col("p") >= 0.5)
+  }
 }
 
 /** Multinomial Naive Bayes over token counts, trained AND evaluated
@@ -128,6 +133,9 @@ object QualityClassifier {
   * idiom — deterministic, retry- and engine-stable.
   */
 object NaiveBayes {
+  private val LabelCol = "lang"
+  private val TextCol = "text"
+  private val IdCol = "doc_id"
 
   /** The q63 deterministic split: first md5 hex char of the id below
     * 'c' ⇒ train (12/16 = 75%). */
@@ -145,20 +153,21 @@ object NaiveBayes {
     * corpus-scale token explode would cost more than the second scan.
     * The vocab-bounded model table IS materialized: it feeds
     * both the V count (a driver action) and the scoring join. */
-  def confusionMatrix(docs: DataFrame, idCol: String, textCol: String,
-                      labelCol: String): DataFrame =
-    confusionMatrixWithSplit(docs, idCol, textCol, labelCol,
-      isTrain(col(idCol)))
+  def confusionMatrix(docs: DataFrame): DataFrame =
+    confusionMatrixWithSplit(docs, isTrain(col(IdCol)))
 
   /** [[confusionMatrix]] with an arbitrary train-membership predicate —
     * the hook k-fold cross-validation plugs its fold complements into. */
-  def confusionMatrixWithSplit(docs: DataFrame, idCol: String,
-                               textCol: String, labelCol: String,
-                               trainPred: Column): DataFrame =
+  def confusionMatrixWithSplit(docs: DataFrame,
+                               trainPred: Column): DataFrame = {
+    val labelCol = "lang"
+    val idCol = "doc_id"
+    val textCol = "text"
     confusionMatrixFromBase(docs.select(col(idCol).as("nb_id"),
       col(labelCol).as("actual"),
       TextAnalysis.tokens(lower(col(textCol))).as("tk"),
       trainPred.as("is_train")))
+  }
 
   /** [[confusionMatrixWithSplit]] over a pre-built
     * (nb_id, actual, tk, is_train) frame — the hook that lets k-fold
@@ -240,18 +249,17 @@ object NaiveBayes {
     * by construction; each fold trains on the other three (4 trainings,
     * each the one-aggregate NB fit). Returns
     * (fold, n_test, n_correct, accuracy). */
-  def crossValAccuracy(docs: DataFrame, idCol: String, textCol: String,
-                       labelCol: String): DataFrame = {
+  def crossValAccuracy(docs: DataFrame): DataFrame = {
     // tokenize the corpus ONCE for all four folds: the lazy per-phase
     // formulation re-tokenized per reference — 4 references per fold x
     // 4 folds = 16 corpus tokenize passes for one fold-sized output.
     // The materialized frame is (id, label, tokens, fold hex) — the same
     // corpus-scale artifact the single-split path deliberately does NOT
     // cache; a 4-fold run amortizes it 16x, which flips that trade.
-    val toked = Materializer.Local(docs.select(col(idCol).as("nb_id"),
-      col(labelCol).as("actual"),
-      TextAnalysis.tokens(lower(col(textCol))).as("tk"),
-      substring(md5(col(idCol).cast("string")), 1, 1).as("fh")))
+    val toked = Materializer.Local(docs.select(col(IdCol).as("nb_id"),
+      col(LabelCol).as("actual"),
+      TextAnalysis.tokens(lower(col(TextCol))).as("tk"),
+      substring(md5(col(IdCol).cast("string")), 1, 1).as("fh")))
     val bounds = Seq(("0", "3"), ("4", "7"), ("8", "b"), ("c", "f"))
     bounds.zipWithIndex.map { case ((lo, hi), f) =>
       val isTest = col("fh") >= lit(lo) && col("fh") <= lit(hi)

@@ -17,23 +17,26 @@ import org.apache.spark.sql.functions._
   *     handles skewed buckets and partial aggregation runs map-side.
   */
 object Dedup {
+  private val VecCol = "embedding"
+  private val TextCol = "text"
+  private val IdCol = "doc_id"
 
   /** Exact duplicate groups: digest -> representative (min doc id) + count.
     * Grouping on md5 keeps the shuffle narrow and is oracle-checkable. */
-  def exactDuplicateGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.groupBy(md5(col(textCol)).as("text_hash"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
+  def exactDuplicateGroups(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col(TextCol)).as("text_hash"))
+      .agg(min(col(IdCol)).as("keep_id"), count(lit(1)).as("n_copies"))
       .filter(col("n_copies") > 1)
 
   /** Drop exact duplicates, keeping the min-id representative per text.
     * Window-free formulation: an aggregate + semi-join back keeps the plan
     * a pair of narrow shuffles on the digest key. */
-  def dropExactDuplicates(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  def dropExactDuplicates(docs: DataFrame): DataFrame = {
     val keep = docs
-      .groupBy(md5(col(textCol)).as("text_hash"))
-      .agg(min(col(idCol)).as(idCol))
-      .select(idCol)
-    docs.join(keep, Seq(idCol), "left_semi")
+      .groupBy(md5(col(TextCol)).as("text_hash"))
+      .agg(min(col(IdCol)).as(IdCol))
+      .select(IdCol)
+    docs.join(keep, Seq(IdCol), "left_semi")
   }
 
   /** MinHash signature as array<string> of length k, using md5 hex-string
@@ -55,7 +58,9 @@ object Dedup {
   }
 
   /** Word-set Jaccard similarity of two texts (unigram token sets). */
-  def jaccardTokens(a: Column, b: Column): Column = {
+  def jaccardTokens: Column = {
+    val a = col("a_text")
+    val b = col("b_text")
     val ta = array_distinct(TextAnalysis.tokens(a))
     val tb = array_distinct(TextAnalysis.tokens(b))
     val inter = size(array_intersect(ta, tb)).cast("double")
@@ -64,7 +69,10 @@ object Dedup {
   }
 
   /** Word n-gram Jaccard similarity of two texts. */
-  def jaccardShingles(a: Column, b: Column, n: Int): Column = {
+  def jaccardShingles: Column = {
+    val a = col("a_text")
+    val b = col("b_text")
+    val n = 3
     val sa = array_distinct(TextAnalysis.shingles(a, n))
     val sb = array_distinct(TextAnalysis.shingles(b, n))
     val inter = size(array_intersect(sa, sb)).cast("double")
@@ -80,7 +88,7 @@ object Dedup {
     * shuffle on band key -> in-bucket self-join -> distinct pairs ->
     * verify. No all-pairs product ever forms.
     */
-  def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
+  def minhashLshPairs(docs: DataFrame,
                       bands: Int = 4,
                       threshold: Double = 0.5,
                       fast: Boolean = true): DataFrame = {
@@ -101,7 +109,7 @@ object Dedup {
     // natural thing to persist at scale anyway (Materializer.Persisted
     // exports it).
     val prepared = Materializer.Local(
-      minhashIndex(docs, idCol, textCol, bands, fast))
+      minhashIndex(docs, bands, fast))
     // explode_outer, not explode: the band array is never empty, and plain
     // explode makes Catalyst infer a size(bandkeys)>0 scan filter that
     // re-evaluates the whole signature a second time per row.
@@ -131,8 +139,10 @@ object Dedup {
     * against it with [[minhashLshPairsIncremental]] — the incremental
     * form a 100 TB corpus actually runs: the historical corpus is never
     * re-signatured, only its matching band buckets are touched. */
-  def minhashIndex(docs: DataFrame, idCol: String, textCol: String,
+  def minhashIndex(docs: DataFrame,
                    bands: Int = 4, fast: Boolean = true): DataFrame = {
+    val idCol = "doc_id"
+    val textCol = "text"
     val k = 16
     val shingleN = 3
     // CPU-bound signature stage: small corpora arrive as one input split,
@@ -436,14 +446,13 @@ object Dedup {
     * a window would funnel the largest cluster through one task. `score`
     * must be deterministic per row (it is evaluated on both sides of the
     * self-join). */
-  def keepBest(docs: DataFrame, pairs: DataFrame, idCol: String,
-               score: Column): DataFrame = {
+  def keepBest(docs: DataFrame, pairs: DataFrame, score: Column): DataFrame = {
     val clusters = nearDupClusters(pairs)
       .withColumnRenamed("doc_id", "kb_id")
     val labeled = docs
-      .join(clusters, col(idCol) === col("kb_id"), "left")
-      .select(col(idCol).as("kb_id2"),
-        coalesce(col("cluster_id"), col(idCol)).as("cluster_id"),
+      .join(clusters, col(IdCol) === col("kb_id"), "left")
+      .select(col(IdCol).as("kb_id2"),
+        coalesce(col("cluster_id"), col(IdCol)).as("cluster_id"),
         score.as("q"))
     val best = labeled.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_members"), max(col("q")).as("best_q"))
@@ -475,8 +484,7 @@ object Dedup {
     * [[nearDupClusters]] (pair-graph-sized, never corpus-wide), one
     * id-keyed left join attaches them, both splits are map-side
     * projections. */
-  def clusterAwareSplit(docs: DataFrame, pairs: DataFrame,
-                        idCol: String): DataFrame = {
+  def clusterAwareSplit(docs: DataFrame, pairs: DataFrame): DataFrame = {
     // the ONE md5-bucket split rule (shared with NaiveBayes/q63), so the
     // per-doc and per-cluster assignments can never drift apart
     def splitOf(c: Column): Column =
@@ -488,10 +496,10 @@ object Dedup {
     // nothing else, the exchange carries one column, and a caller whose
     // docs already contains a cluster_id/cs_id column can't make the
     // post-join references ambiguous
-    docs.select(col(idCol))
-      .join(clusters, col(idCol) === col("cs_id"), "left")
-      .select(col(idCol).as("doc_id"),
-        coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
+    docs.select(col(IdCol))
+      .join(clusters, col(IdCol) === col("cs_id"), "left")
+      .select(col(IdCol).as("doc_id"),
+        coalesce(col("cluster_id"), col(IdCol)).as("cluster_id"))
       .select(col("doc_id"), col("cluster_id"),
         splitOf(col("doc_id")).as("naive_split"),
         splitOf(col("cluster_id")).as("split"))
@@ -508,8 +516,11 @@ object Dedup {
     * semantics (digit-wise bit_count of XOR), so it oracle-checks.
     * Applied to candidate pairs only; [[hammingHexStrHof]] below is the
     * executable spec a differential test pins it against. */
-  def hammingHexStr(a: Column, b: Column): Column =
+  def hammingHexStr: Column = {
+    val a = col("a_sig")
+    val b = col("b_sig")
     graft.functions.GraftFunctions.hex_hamming(a, b)
+  }
 
   /** Reference HOF formulation of [[hammingHexStr]] (interpreted —
     * 16 locate/substring calls per pair): kept as the executable spec of
@@ -534,8 +545,7 @@ object Dedup {
     * RECALL 1.0 — no probabilistic miss, unlike MinHash banding. Plan
     * shape matches the MinHash path: map-side signatures, equi-join on
     * (block index, block value), exact verify on candidates only. */
-  def simhashNearDupPairs(docs: DataFrame, idCol: String,
-                          textCol: String): DataFrame = {
+  def simhashNearDupPairs(docs: DataFrame): DataFrame = {
     // (id, 16-char sig) is referenced three times (banding + both sides of
     // the verify re-attach); materialize it once so the md5-per-token
     // signature pass runs once over the corpus, not three times — the
@@ -545,7 +555,7 @@ object Dedup {
     // per-row cost, and a single-row-group input would otherwise run it
     // inside a one-task scan stage (no-op at production partitioning)
     val sig = Materializer.Local(
-      FanOut(docs.select(col(idCol).as("id"), col(textCol).as("t_")))
+      FanOut(docs.select(col(IdCol).as("id"), col(TextCol).as("t_")))
         .select(col("id"), simhashHex(col("t_")).as("sig")))
     bandedHammingPairs(sig)
   }
@@ -578,7 +588,7 @@ object Dedup {
         Seq("a_id"))
       .join(sig.select(col("id").as("b_id"), col("sig").as("b_sig")),
         Seq("b_id"))
-      .withColumn("hamming", hammingHexStr(col("a_sig"), col("b_sig")))
+      .withColumn("hamming", hammingHexStr)
       .filter(col("hamming") <= MaxHamming)
       .select(col("a_id"), col("b_id"), col("hamming"))
   }
@@ -650,7 +660,7 @@ object Dedup {
         Seq("a_id"))
       .join(all.select(col("id").as("b_id"), col("sig").as("b_sig")),
         Seq("b_id"))
-      .withColumn("hamming", hammingHexStr(col("a_sig"), col("b_sig")))
+      .withColumn("hamming", hammingHexStr)
       .filter(col("hamming") <= MaxHamming)
       .select(col("a_id"), col("b_id"), col("hamming"))
   }
@@ -676,9 +686,11 @@ object Dedup {
     * codegen'd cosine kernel over LSH-bucketed candidates (see
     * [[Similarity.lshBuckets]]) as a prefilter and the decimal-exact
     * cosine on survivors. */
-  def embeddingNearDupPairs(embs: DataFrame, idCol: String, vecCol: String,
+  def embeddingNearDupPairs(embs: DataFrame,
                             planes: Int = 12, threshold: Double = 0.95)
       : DataFrame = {
+    val idCol = "vec_id"
+    val vecCol = "embedding"
     val bucketed = embs.select(col(idCol).as("id"), col(vecCol).as("vec"),
       Similarity.lshBuckets(col(vecCol), planes).as("bucket"))
     val l = bucketed.select(col("bucket"), col("id").as("a_id"), col("vec").as("a_vec"))
@@ -714,10 +726,10 @@ object Dedup {
     * funnel one task. Pairs sharing an id are excluded. Returns
     * (id, n_hits, best_eval, sim). */
   def semanticContamination(corpus: DataFrame, evalSet: DataFrame,
-                            idCol: String, vecCol: String,
                             threshold: Double): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val e = evalSet.select(col(idCol).as("e_id"), col(vecCol).as("e_vec"))
+    val idCol = "vec_id"
+    val c = corpus.select(col(idCol).as("id"), col(VecCol).as("vec"))
+    val e = evalSet.select(col(idCol).as("e_id"), col(VecCol).as("e_vec"))
     val fast = graft.functions.GraftFunctions.cosine_sim(col("vec"),
       col("e_vec"))
     val joined = c.join(
@@ -750,10 +762,10 @@ object Dedup {
     * so a chain a~b~c with a≁c keeps a AND c). Returns one row per
     * dropped vector: (id, dup_of = smallest earlier near-dup,
     * n_earlier = how many earlier near-dups it has). */
-  def semanticDedupDrops(embs: DataFrame, idCol: String, vecCol: String,
+  def semanticDedupDrops(embs: DataFrame,
                          planes: Int = 12, threshold: Double = 0.95)
       : DataFrame =
-    embeddingNearDupPairs(embs, idCol, vecCol, planes, threshold)
+    embeddingNearDupPairs(embs, planes, threshold)
       .groupBy(col("b_id"))
       .agg(min(col("a_id")).as("dup_of"), count(lit(1)).as("n_earlier"))
       .select(col("b_id").as("id"), col("dup_of"), col("n_earlier"))
@@ -782,9 +794,10 @@ object Dedup {
     * Scale shape: one vocab-keyed df join (AQE skew-join for the head),
     * one per-doc sort, one prefix equi-join + distinct, verify touches
     * candidates only via two id-keyed joins. */
-  def prefixFilterJaccardPairs(docs: DataFrame, idCol: String,
-                               textCol: String, shingleN: Int,
-                               thetaNum: Int, thetaDen: Int): DataFrame = {
+  def prefixFilterJaccardPairs(docs: DataFrame): DataFrame = {
+    val shingleN = 3
+    val thetaNum = 1
+    val thetaDen = 2
     require(thetaNum > 0 && thetaDen >= thetaNum)
     // r14 REVERT of the r13 shingling fan-out: the sf1 filtered A/B the
     // r13 verdict asked for shows NO win there (fan-out ON
@@ -793,7 +806,7 @@ object Dedup {
     // small cost (q209 3.85 -> 4.54) — the shingling kernel is cheap
     // enough per row that the exchange never pays for itself.
     val sets = Materializer.Local(
-      (docs.select(col(idCol).as("id"), col(textCol).as("t_")))
+      (docs.select(col(IdCol).as("id"), col(TextCol).as("t_")))
         .select(col("id"),
           array_distinct(TextAnalysis.shingles(col("t_"), shingleN))
             .as("sh")))
@@ -954,7 +967,7 @@ object Dedup {
     * formulation it replaced exploded |pairs|×|doc vocab| narrow rows
     * through an extra pair-keyed aggregation exchange (measured 2.8×
     * on the verify stage at sf0.1, output bit-identical). */
-  def weightedMinhashPairs(docs: DataFrame, idCol: String, textCol: String,
+  def weightedMinhashPairs(docs: DataFrame,
                            k: Int = 8, bands: Int = 4): DataFrame = {
     val thetaNum = 3
     val thetaDen = 5
@@ -969,8 +982,8 @@ object Dedup {
     // model algebra, the |tf|*k argmin partials, the tfMaps build —
     // inherited that near-serial partitioning (the q304 signature stage
     // ran ~5 s on ONE task). At production width both guards no-op.
-    val tf = FanOut(Materializer.Local(FanOut(docs.select(col(idCol).as("id"),
-        col(textCol).as("t_")))
+    val tf = FanOut(Materializer.Local(FanOut(docs.select(col(IdCol).as("id"),
+        col(TextCol).as("t_")))
       .select(col("id"), explode(TextAnalysis.tokens(col("t_"))).as("t"))
       .groupBy(col("id"), col("t")).agg(count(lit(1)).as("w"))))
     // the signatures reuse the materialized tf: tokenizing the corpus is

@@ -31,8 +31,9 @@ import org.apache.spark.sql.functions._
   * Returns (a_id, b_id, dist), a_id < b_id, dist <= maxDist. */
 object EditJoin {
 
-  def editDistancePairs(df: DataFrame, idCol: String,
-                        strCol: String): DataFrame = {
+  def editDistancePairs(df: DataFrame): DataFrame = {
+    val idCol = "id"
+    val strCol = "str"
     // segment blocking is practical for maxDist in [1, 4]
     val maxDist = 1
     val K = maxDist

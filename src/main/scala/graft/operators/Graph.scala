@@ -343,8 +343,9 @@ object Graph {
     * (not a frontier delta) keeps each round idempotent and
     * oracle-replayable; with min-combine the re-derived closer labels
     * collapse for free. */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int)
+  def bfsHops(edges: DataFrame, seeds: DataFrame)
       : DataFrame = {
+    val maxHops = 3
     require(maxHops >= 1)
     val e0 = edges.select(col("src"), col("dst"))
     val sym = Materializer.Local(

@@ -18,6 +18,7 @@ import org.apache.spark.sql.functions._
   * the per-shard stats aggregate in [[zorderShardStats]]).
   */
 object Layout {
+  private val Bits = 8
 
   /** Morton interleave of two non-negative integer columns, `bits` bits
     * each: bit i of `x` lands at position 2i, bit i of `y` at 2i+1.
@@ -36,25 +37,29 @@ object Layout {
 
   /** The matching SQL text for [[zorder]] (same term order, same
     * arithmetic) — used by oracle queries and by anyone materializing the
-    * layout from a SQL engine. */
-  def zorderSql(x: String, y: String, bits: Int): String =
-    (0 until bits).map { i =>
-      s"((($x >> $i) & 1) << ${2 * i}) + ((($y >> $i) & 1) << ${2 * i + 1})"
+    * layout from a SQL engine, over columns `x` and `y`, `Bits` bits
+    * each. */
+  def zorderSql: String =
+    (0 until Bits).map { i =>
+      s"(((x >> $i) & 1) << ${2 * i}) + (((y >> $i) & 1) << ${2 * i + 1})"
     }.mkString(" + ")
 
-  /** Plan `nShards` equal-width Z-ranges over the `bits`-bit square and
-    * report, per shard, the row count and the min/max of each dimension —
+  /** Plan `nShards` equal-width Z-ranges over the `Bits`-bit square of
+    * (`ub`, `hb`) and report, per shard, the row count and the min/max of
+    * each dimension —
     * the metadata a layout writer would persist as file-level statistics.
     * Narrow per-shard ranges on BOTH dims are what make the layout prune:
-    * the shard width in each dimension is ~2^(bits/2) cells, not the full
-    * 2^bits span a single-column sort leaves on its secondary dim. */
-  def zorderShardStats(df: DataFrame, xCol: String, yCol: String,
-                       bits: Int, nShards: Int): DataFrame = {
+    * the shard width in each dimension is ~2^(Bits/2) cells, not the full
+    * 2^Bits span a single-column sort leaves on its secondary dim. */
+  def zorderShardStats(df: DataFrame): DataFrame = {
+    val xCol = "ub"
+    val yCol = "hb"
+    val nShards = 16
     require(nShards > 0 && (nShards & (nShards - 1)) == 0,
       s"nShards must be a power of two: $nShards")
-    val shift = 2 * bits - java.lang.Long.numberOfTrailingZeros(nShards.toLong)
+    val shift = 2 * Bits - java.lang.Long.numberOfTrailingZeros(nShards.toLong)
     df.select(col(xCol).as("x"), col(yCol).as("y"),
-        zorder(col(xCol), col(yCol), bits).as("z"))
+        zorder(col(xCol), col(yCol), Bits).as("z"))
       .groupBy(shiftright(col("z"), shift).as("shard"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("x")).as("x_min"), max(col("x")).as("x_max"),

@@ -319,8 +319,9 @@ object Multimodal {
       * [[encodeAvi]]'s solid-colour frames, used by fixtures that need
       * structured first-frame content (raw-DIB is lossless, so decoded
       * pixels equal encoded pixels exactly). */
-    def encodeAviFrames(width: Int, height: Int,
-                        frames: Array[Array[Int]]): Array[Byte] = {
+    def encodeAviFrames(frames: Array[Array[Int]]): Array[Byte] = {
+      val width = 9
+      val height = 8
       require(frames.nonEmpty && frames.forall(_.length == width * height))
       val solid = encodeAvi(width, height, Array.fill(frames.length)(0))
       // rebuild with pixel frames: reuse the header by re-encoding movi
@@ -906,8 +907,9 @@ object Multimodal {
     * Decode is the same standards-conformant RIFF walk as
     * [[VideoCodec.decode]]; undecodable payloads yield no rows (the
     * corrupt-row policy of the hash extractors). Map-side only. */
-  def sampleVideoFrames(media: Dataset[MediaRow], everyK: Int)
+  def sampleVideoFrames(media: Dataset[MediaRow])
       : Dataset[FrameSample] = {
+    val everyK = 2
     require(everyK >= 1)
     implicit val enc = Encoders.product[FrameSample]
     media.mapPartitions { rows =>
@@ -931,8 +933,9 @@ object Multimodal {
     * goes through `javax.sound.sampled` (any container the JDK reads),
     * is converted to signed 16-bit PCM, and the means come from actual
     * samples. None when the bytes are not decodable audio. */
-  def decodeEnvelope(payload: Array[Byte], nWindows: Int)
-      : Option[Array[Long]] =
+  def decodeEnvelope(payload: Array[Byte])
+      : Option[Array[Long]] = {
+    val nWindows = 65
     try {
       import javax.sound.sampled.{AudioFormat, AudioSystem}
       val ais =
@@ -968,6 +971,7 @@ object Multimodal {
         Some(env)
       }
     } catch { case _: Exception => None }
+  }
 
   /** 64-bit energy-envelope fingerprint as 16 hex chars: bit j set iff
     * window j+1 is louder than window j over a 65-window envelope — the
@@ -1006,7 +1010,7 @@ object Multimodal {
     implicit val enc = Encoders.product[AudioHash]
     media.mapPartitions { rows =>
       rows.map { r =>
-        decodeEnvelope(r.payload, 65) match {
+        decodeEnvelope(r.payload) match {
           case Some(env) => AudioHash(r.doc_id, envHashHex(env),
             decoded = true)
           case None => AudioHash(r.doc_id, "", decoded = false)
@@ -1023,8 +1027,8 @@ object Multimodal {
     * stream-writer path costs more than the whole decode; the REAL
     * `javax.sound.sampled` decode still validates every byte of it
     * (spec + scalacheck property pin generator/kernel agreement). */
-  private[graft] def encodeWavSamples(sampleRate: Int,
-                                      samples: Array[Short]): Array[Byte] = {
+  private[graft] def encodeWavSamples(samples: Array[Short]): Array[Byte] = {
+    val sampleRate = 8000
     val dataLen = samples.length * 2
     val out = new Array[Byte](44 + dataLen)
     def fourcc(off: Int, s: String): Unit = {
@@ -1082,7 +1086,7 @@ object Multimodal {
       if (w < 64) amp += (if (bits(w) == 1) 8 else -8)
       w += 1
     }
-    encodeWavSamples(8000, samples)
+    encodeWavSamples(samples)
   }
 
   /** Audio-dedup fixture table: real envelope WAV payloads per document
@@ -1150,7 +1154,7 @@ object Multimodal {
       (v << 16) | (v << 8) | v
     }
     val frame1 = Array.fill(8 * 9)(((docId % 256).toInt << 16) | 0x4040)
-    VideoCodec.encodeAviFrames(9, 8, Array(frame0, frame1))
+    VideoCodec.encodeAviFrames(Array(frame0, frame1))
   }
 
   /** Video-dedup fixture table: real gradient AVI payloads per document,

@@ -32,8 +32,10 @@ object Overlap {
   /** One KMV sketch row per slice: `(slice, hs)` where `hs` is the sorted
     * list of the k smallest distinct md5 hex digests of the slice's word
     * `shingleN`-gram shingles. */
-  def kmvSketch(docs: DataFrame, sliceCol: String, textCol: String,
-                shingleN: Int, k: Int): DataFrame = {
+  def kmvSketch(docs: DataFrame, k: Int): DataFrame = {
+    val sliceCol = "lang"
+    val textCol = "text"
+    val shingleN = 3
     val kmin = udaf(new graft.functions.KMinStringsAgg(k))
     docs
       .select(col(sliceCol).as("slice"),
@@ -65,8 +67,6 @@ object Overlap {
     * table is materialized before the self-join — it is referenced twice
     * there (side A and side B), and without the pin the whole corpus scan
     * + sketch aggregation would re-execute per side. */
-  def sliceOverlap(docs: DataFrame, sliceCol: String, textCol: String,
-                   shingleN: Int, k: Int): DataFrame =
-    kmvJaccard(
-      Materializer.Local(kmvSketch(docs, sliceCol, textCol, shingleN, k)), k)
+  def sliceOverlap(docs: DataFrame, k: Int): DataFrame =
+    kmvJaccard(Materializer.Local(kmvSketch(docs, k)), k)
 }

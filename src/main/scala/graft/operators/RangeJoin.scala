@@ -40,9 +40,12 @@ object RangeJoin {
     * as the typical interval keeps that at <= 2 while still subdividing the
     * timeline enough that one bin's points fit in an executor's hash table.
     */
-  def intervalJoin(points: DataFrame, intervals: DataFrame, key: String,
-                   tsCol: String, startCol: String, endCol: String,
+  def intervalJoin(points: DataFrame, intervals: DataFrame,
                    binSeconds: Long): DataFrame = {
+    val key = "user_id"
+    val tsCol = "ts"
+    val startCol = "w_start"
+    val endCol = "w_end"
     require(binSeconds > 0, s"binSeconds must be positive: $binSeconds")
     val p = points.withColumn("__pbin",
       floor(col(tsCol).cast("long") / binSeconds))

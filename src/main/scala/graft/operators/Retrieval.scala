@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
   * postings of 10 terms.
   */
 object Retrieval {
+  private val TextCol = "text"
+  private val IdCol = "doc_id"
 
   /** The trimmed-postings frame both batch rankers score from:
     * (doc_id, dl, t) — one row per doc with its token count, exploded
@@ -25,10 +27,9 @@ object Retrieval {
     * BM25 + QLM) tokenizes the corpus ONCE and shares the materialized
     * frame (r14, §2.4 fewer passes) — both batch rankers take it as
     * their input. */
-  def trimmedPostings(docs: DataFrame, idCol: String, textCol: String,
-                      allTerms: Seq[String]): DataFrame = {
-    val toks = TextAnalysis.tokens(col(textCol))
-    Materializer.Local(docs.select(col(idCol).as("doc_id"),
+  def trimmedPostings(docs: DataFrame, allTerms: Seq[String]): DataFrame = {
+    val toks = TextAnalysis.tokens(col(TextCol))
+    Materializer.Local(docs.select(col(IdCol).as("doc_id"),
       size(toks).as("dl"),
       explode_outer(filter(toks, t => t.isInCollection(allTerms)))
         .as("t")))
@@ -51,9 +52,11 @@ object Retrieval {
     * op order (ln ulps absorbed by round(6)); the per-doc sum accumulates
     * in DECIMAL(38,6) so partial-agg order can never flip a bit; the
     * final top-N is a bounded TakeOrdered, not a window. */
-  def bm25(docs: DataFrame, idCol: String, textCol: String,
+  def bm25(docs: DataFrame,
            queryTerms: Seq[String],
            topN: Int = 10): DataFrame = {
+    val idCol = "doc_id"
+    val textCol = "text"
     val k1 = 1.2
     val b = 0.75
     require(queryTerms.nonEmpty && topN > 0)
@@ -234,12 +237,12 @@ object Retrieval {
     * |q|·N cross product never materializes. Matched-term adjustments
     * accumulate as round(9) DECIMAL(38,9); C's three ln terms likewise;
     * one pinned final op order. */
-  def queryLikelihood(docs: DataFrame, idCol: String, textCol: String,
+  def queryLikelihood(docs: DataFrame,
                       queryTerms: Seq[String], mu: Double = 100.0,
                       topN: Int = 20): DataFrame = {
     require(queryTerms.nonEmpty && topN > 0 && mu > 0)
-    val toks = TextAnalysis.tokens(col(textCol))
-    val dl = Materializer.Local(docs.select(col(idCol).as("doc_id"),
+    val toks = TextAnalysis.tokens(col(TextCol))
+    val dl = Materializer.Local(docs.select(col(IdCol).as("doc_id"),
       size(toks).as("dl"),
       explode_outer(filter(toks, t => t.isInCollection(queryTerms)))
         .as("t")))
@@ -310,16 +313,16 @@ object Retrieval {
     * IEEE doubles summed in DECIMAL(38,20) per pair, one fixed op order,
     * round(6). Returns (a_id, b_id, n_shared, sim) for pairs with
     * sim >= threshold, a_id < b_id. */
-  def sparseCosinePairs(docs: DataFrame, idCol: String, textCol: String,
+  def sparseCosinePairs(docs: DataFrame,
                         maxDf: Long, threshold: Double, shingleN: Int = 1)
       : DataFrame = {
     val terms =
-      if (shingleN <= 1) TextAnalysis.tokens(col(textCol))
-      else TextAnalysis.shingles(col(textCol), shingleN)
+      if (shingleN <= 1) TextAnalysis.tokens(col(TextCol))
+      else TextAnalysis.shingles(col(TextCol), shingleN)
     // (doc, term, tf) — one partial-combined exchange; pinned: the norm
     // aggregate, df filter, and both join sides all read it
     val tf = Materializer.Local(docs
-      .select(col(idCol).as("doc_id"), explode_outer(terms).as("t"))
+      .select(col(IdCol).as("doc_id"), explode_outer(terms).as("t"))
       .filter(col("t").isNotNull)
       .groupBy(col("doc_id"), col("t"))
       .agg(count(lit(1)).cast("double").as("tf")))
@@ -438,13 +441,13 @@ object Retrieval {
     * maxDf-droppable mass — no all-pairs product. Containment is an
     * exact integer ratio (n_shared / |A|), so there is no float algebra
     * to replicate at all. */
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       shingleN: Int, maxDf: Long, threshold: Double)
+  def containmentPairs(docs: DataFrame, maxDf: Long, threshold: Double)
       : DataFrame = {
+    val shingleN = 3
     val sh = Materializer.Local(docs
-      .select(col(idCol).as("doc_id"),
+      .select(col(IdCol).as("doc_id"),
         explode(array_distinct(
-          TextAnalysis.shingles(col(textCol), shingleN))).as("t")))
+          TextAnalysis.shingles(col(TextCol), shingleN))).as("t")))
     // the kept-shingle set (df <= maxDf) is the Heaps-growing RARE tail
     // of the vocabulary — unhinted, like the round-9 q139 kept-term
     // de-hint: both sides key on the shingle, AQE broadcasts only when
@@ -499,14 +502,14 @@ object Retrieval {
     * (tf desc, term asc) key — never on a float weight. Two driver
     * actions, both bounded (fbDocs ids, fbTerms strings); the term
     * count pass explodes ONLY the feedback docs. */
-  def rm3ExpandTerms(docs: DataFrame, idCol: String, textCol: String,
+  def rm3ExpandTerms(docs: DataFrame,
                      baseQuery: Seq[String], fbDocs: Int = 5,
                      fbTerms: Int = 3): Seq[String] = {
     require(fbDocs > 0 && fbTerms > 0)
-    val run1 = bm25(docs, idCol, textCol, baseQuery, topN = fbDocs)
+    val run1 = bm25(docs, baseQuery, topN = fbDocs)
     val ids = run1.select(col("doc_id")).collect().map(_.getLong(0)).toSeq
-    val exp = docs.filter(col(idCol).isInCollection(ids))
-      .select(explode(TextAnalysis.tokens(col(textCol))).as("t"))
+    val exp = docs.filter(col(IdCol).isInCollection(ids))
+      .select(explode(TextAnalysis.tokens(col(TextCol))).as("t"))
       .filter(!col("t").isInCollection(baseQuery))
       .groupBy(col("t")).agg(count(lit(1)).as("tf"))
       .orderBy(col("tf").desc, col("t").asc).limit(fbTerms)

@@ -15,11 +15,17 @@ import org.apache.spark.sql.functions._
   * returns the identical document set.
   */
 object Sampling {
+  private val Tokens = col("toks")
+  private val TextCol = "text"
+  private val IdCol = "doc_id"
+  private val GroupCol = "source"
 
   /** First 8 md5 hex chars of the id — the uniform, engine-portable rank
     * key (lexicographic == numeric for fixed-width lowercase hex). */
-  private def hashKey(idCol: String): Column =
+  private def hashKey: Column = {
+    val idCol = "doc_id"
     substring(md5(col(idCol).cast("string")), 1, 8)
+  }
 
   /** Exact-count stratified sample: for every group, the `n` rows with the
     * smallest (md5(id), id) rank — min(n, |group|) rows when a group is
@@ -38,10 +44,11 @@ object Sampling {
     * somehow fell below `n` (hash-variance tail, probability ~e^{-margin·n}
     * ) is re-ranked over its full population, so the result is exactly the
     * true top-n by construction, not with high probability. */
-  def stratifiedSample(df: DataFrame, groupCol: String, idCol: String,
+  def stratifiedSample(df: DataFrame,
                        n: Int, margin: Double = 4.0): DataFrame = {
+    val groupCol = "lang"
     require(n > 0 && margin >= 1.0)
-    val h = hashKey(idCol)
+    val h = hashKey
     val counts = df.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_total"))
     // candidate keep-probability per group, as a fixed-width hex threshold
@@ -82,7 +89,7 @@ object Sampling {
       if (short.isEmpty) cands
       else cands.filter(!isShort).unionByName(df.filter(isShort))
     val w = Window.partitionBy(col(groupCol))
-      .orderBy(h.asc, col(idCol).asc)
+      .orderBy(h.asc, col(IdCol).asc)
     pool.withColumn("rk", row_number().over(w).cast("int"))
       .filter(col("rk") <= n)
   }
@@ -110,15 +117,14 @@ object Sampling {
     *
     * `target` must be a subset of `df` rows (same id space). Returns
     * (rk, id, logw, score) for the selected docs. */
-  def dsirResample(df: DataFrame, target: DataFrame, idCol: String,
-                   textCol: String, n: Int): DataFrame = {
+  def dsirResample(df: DataFrame, target: DataFrame, n: Int): DataFrame = {
     val alpha = 0.5
     require(n > 0)
     val tf = Materializer.Local(df
-      .select(col(idCol).as("id"),
-        explode(TextAnalysis.tokens(col(textCol))).as("t"))
+      .select(col(IdCol).as("id"),
+        explode(TextAnalysis.tokens(col(TextCol))).as("t"))
       .groupBy(col("id"), col("t")).agg(count(lit(1)).as("tf")))
-    val targetIds = target.select(col(idCol).as("id"))
+    val targetIds = target.select(col(IdCol).as("id"))
     // id-keyed SEMI join, unhinted: the target slice can be an
     // SF-linear selection (q88 keys it by source), so a forced
     // broadcast is the 100x-scale OOM class — AQE still broadcasts
@@ -136,7 +142,7 @@ object Sampling {
     // an empty target slice has no LM to resample toward: return the
     // empty selection (schema intact) instead of ln(x/0) noise
     if (nTgt == 0.0)
-      return df.select(lit(0).as("rk"), col(idCol).as("id"),
+      return df.select(lit(0).as("rk"), col(IdCol).as("id"),
         lit(0.0).as("logw"), lit(0.0).as("score")).limit(0)
     // ln p_target(t) - ln p_raw(t); a term absent from the target LM
     // still scores via the smoothing mass (c_tgt -> 0)
@@ -211,15 +217,16 @@ object Sampling {
     * group-partitioned window, so a group holding half of 100 TB still
     * can't funnel one task. Keys round(6) so ranking never hangs on a
     * libm ulp; ties break by id. Returns (group, id, score, rk). */
-  def weightedSample(df: DataFrame, groupCol: String, idCol: String,
-                     weight: Column, n: Int): DataFrame = {
+  def weightedSample(df: DataFrame, weight: Column, n: Int): DataFrame = {
+    val groupCol = "lang"
+    val idCol = "doc_id"
     require(n > 0)
     val u = (conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
       .cast("double") + lit(1.0)) / lit(4294967297.0)
     val key = round(log(weight) - log(-log(u)), 6)
     TopK.groupTopK(
       df.select(col(groupCol), col(idCol), key.as("aes_key")),
-      groupCol, col("aes_key"), idCol, n)
+      groupCol, col("aes_key"), n)
   }
 
   /** Per-group cap keeping the BEST rows — the RefinedWeb-style per-domain
@@ -238,8 +245,9 @@ object Sampling {
     * buffer's position IS the rank — no window anywhere.
     *
     * Returns (group, id, score, rk), rk 1-based best-first. */
-  def cappedByScore(df: DataFrame, groupCol: String, idCol: String,
-                    score: Column, n: Int): DataFrame = {
+  def cappedByScore(df: DataFrame, score: Column, n: Int): DataFrame = {
+    val groupCol = "source"
+    val idCol = "doc_id"
     require(n > 0)
     val agg = udaf(new graft.functions.TopKAgg(n))
     df.select(col(groupCol), score.as("s"),
@@ -271,13 +279,13 @@ object Sampling {
     * Returns (group, n_docs, tokens_avail, target_tokens,
     * sampling_rate, epochs, capped_tokens, achievable_share) ordered by
     * group. */
-  def mixturePlan(docs: DataFrame, groupCol: String, tokens: Column,
+  def mixturePlan(docs: DataFrame,
                   budget: Long, maxEpochs: Int = 4): DataFrame = {
     require(budget > 0 && maxEpochs >= 1)
     val per = docs
-      .groupBy(col(groupCol).as("grp"))
+      .groupBy(col(GroupCol).as("grp"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(tokens.cast("long")).as("tokens_avail"))
+        sum(Tokens.cast("long")).as("tokens_avail"))
     val nGrp = per.agg(count(lit(1)).as("n_groups"))
     // uniform target: every group owes budget / n_groups tokens (integer
     // division — the remainder is deliberately left unassigned rather
@@ -301,12 +309,12 @@ object Sampling {
       .withColumn("capped_tokens",
         when(hasTok, least(col("target_tokens"),
           col("tokens_avail") * col("epochs"))).otherwise(lit(0L)))
-      .select(col("grp").as(groupCol), col("n_docs"),
+      .select(col("grp").as(GroupCol), col("n_docs"),
         col("tokens_avail"), col("target_tokens"), col("sampling_rate"),
         col("epochs"), col("capped_tokens"),
         round(col("capped_tokens").cast("double") / lit(budget.toDouble),
           6).as("achievable_share"))
-      .orderBy(col(groupCol))
+      .orderBy(col(GroupCol))
   }
 
   /** Temperature-scaled mixture weights (q326) — the multilingual /
@@ -333,22 +341,23 @@ object Sampling {
     * re-execute the corpus scan once per reference), and the grid
     * rides a broadcast literal cross. The global window is over
     * |sources| rows, never the corpus. */
-  def temperatureMixture(docs: DataFrame, groupCol: String,
-                         tokens: Column)
+  def temperatureMixture(docs: DataFrame, tokens: Column)
       : DataFrame = {
     val sqrtLevels = Seq(0, 1, 2)
     val spark = docs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    def sqrtK(c: Column, k: Int): Column =
+    def sqrtK(k: Int): Column = {
+      val c = col("p")
       (1 to k).foldLeft(c)((x, _) => sqrt(x))
-    val base = docs.groupBy(col(groupCol).as("grp"))
+    }
+    val base = docs.groupBy(col(GroupCol).as("grp"))
       .agg(sum(tokens.cast("long")).cast("long").as("toks"))
     val grid = sqrtLevels.map(k => (k, math.pow(0.5, k)))
       .toDF("k", "t") // 0.5^k is a power of two — exact in the literal
     val w = sqrtLevels.tail.foldLeft(
-        when(col("k") === sqrtLevels.head, sqrtK(col("p"), sqrtLevels.head))
-      )((acc, k) => acc.when(col("k") === k, sqrtK(col("p"), k)))
+        when(col("k") === sqrtLevels.head, sqrtK(sqrtLevels.head))
+      )((acc, k) => acc.when(col("k") === k, sqrtK(k)))
     base
       .withColumn("total_toks",
         sum(col("toks")).over(Window.partitionBy()))
@@ -364,7 +373,7 @@ object Sampling {
       // window's accumulation order cannot flip a bit
       .withColumn("sw", sum(col("w").cast("decimal(38,20)"))
         .over(Window.partitionBy(col("k"))).cast("double"))
-      .select(col("t"), col("grp").as(groupCol), col("toks"),
+      .select(col("t"), col("grp").as(GroupCol), col("toks"),
         round(col("p"), 6).as("share_natural"),
         when(col("sw") > 0, round(col("w") / col("sw"), 6))
           .otherwise(0.0).as("share_sampled"))
@@ -372,7 +381,7 @@ object Sampling {
         when(col("share_natural") > 0,
           round(col("share_sampled") / col("share_natural"), 6))
           .otherwise(0.0))
-      .orderBy(col("t").desc, col(groupCol))
+      .orderBy(col("t").desc, col(GroupCol))
   }
 
   /** Token-budget greedy selection — "fill an N-token training budget
@@ -390,7 +399,7 @@ object Sampling {
     * bucket runs a local (k, id) window, and the driver prefix-sums
     * nBuckets totals. No single-partition window, no global sort.
     * Returns per-doc (id, w, s, selected). */
-  def budgetSelect(docs: DataFrame, idCol: String, weight: Column,
+  def budgetSelect(docs: DataFrame, weight: Column,
                    score: Column, budget: Long, nBuckets: Int = 64)
       : DataFrame = {
     require(budget >= 0 && nBuckets > 0)
@@ -400,7 +409,7 @@ object Sampling {
     // score expression per boundary element after projection collapse
     // (the q98 trap — measured 20.6 s -> ~1 s at sf0.1 for a regex-heavy
     // quality score)
-    val base = Materializer.Local(docs.select(col(idCol).cast("long").as("id"),
+    val base = Materializer.Local(docs.select(col(IdCol).cast("long").as("id"),
       weight.cast("long").as("w"), score.cast("double").as("s"))
       .withColumn("k1", -col("s")))
     val probs = (1 until nBuckets).map(_.toDouble / nBuckets)
@@ -453,21 +462,20 @@ object Sampling {
     * float summation anywhere — so the unrolled SQL replay is
     * bit-identical. Returns one row per greedy round:
     * (rk, doc_id, gain, objective). */
-  def facilityLocationSelect(docs: DataFrame, idCol: String,
-                             textCol: String, nCand: Int = 30,
+  def facilityLocationSelect(docs: DataFrame, nCand: Int = 30,
                              k: Int = 5): DataFrame = {
     val shingleN = 3
     import org.apache.spark.sql.expressions.Window
     require(nCand >= 1 && k >= 1)
     val zero = lit(0).cast("decimal(19,9)")
-    val sh = docs.select(col(idCol).as("did"),
+    val sh = docs.select(col(IdCol).as("did"),
       explode(array_distinct(
-        TextAnalysis.shingles(col(textCol), shingleN))).as("sg"))
+        TextAnalysis.shingles(col(TextCol), shingleN))).as("sg"))
     val cands = docs
-      .orderBy(md5(concat(lit("fl|"), col(idCol).cast("string"))).asc,
-        col(idCol).asc)
+      .orderBy(md5(concat(lit("fl|"), col(IdCol).cast("string"))).asc,
+        col(IdCol).asc)
       .limit(nCand)
-      .select(col(idCol).as("cid"), col(textCol).as("ctext"))
+      .select(col(IdCol).as("cid"), col(TextCol).as("ctext"))
     val csh = cands.select(col("cid"),
       explode(array_distinct(
         TextAnalysis.shingles(col("ctext"), shingleN))).as("sg"))
@@ -536,9 +544,9 @@ object Sampling {
     * Returns (stage, min_tier, n_tiers, n_docs, tokens_avail,
     * stage_budget, sampling_rate, epochs, capped_tokens,
     * achievable_share) ordered by stage. */
-  def curriculumPlan(docs: DataFrame, tier: Column, tokens: Column,
-                     budget: Long)
+  def curriculumPlan(docs: DataFrame, budget: Long)
       : DataFrame = {
+    val tier = col("tier")
     val nTiers = 4
     val maxEpochs = 4
     require(budget > 0)
@@ -546,7 +554,7 @@ object Sampling {
     import spark.implicits._
     val perTier = docs
       .groupBy(tier.cast("int").as("tier"))
-      .agg(count(lit(1)).as("td"), sum(tokens.cast("long")).as("tt"))
+      .agg(count(lit(1)).as("td"), sum(Tokens.cast("long")).as("tt"))
     val stages = (1 to nTiers).map(st => (st, nTiers - st))
       .toDF("stage", "min_tier")
     val weightSum = nTiers * (nTiers + 1) / 2

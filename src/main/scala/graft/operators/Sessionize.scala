@@ -14,13 +14,16 @@ import org.apache.spark.sql.functions._
   * (session_window / flatMapGroupsWithState).
   */
 object Sessionize {
+  private val TsCol = "ts"
 
   /** Assign gap-based session ids per user: a new session starts when the
     * gap to the previous event exceeds `gapSeconds`; events at the same
     * timestamp are ordered by `event_id`. Returns the input plus
     * `session_seq` (1-based per-user session index). */
-  def withSessionIds(events: DataFrame, userCol: String, tsCol: String,
-                     gapSeconds: Long): DataFrame = {
+  def withSessionIds(events: DataFrame): DataFrame = {
+    val userCol = "user_id"
+    val tsCol = "ts"
+    val gapSeconds: Long = 1800
     val byUser = Window.partitionBy(col(userCol))
       .orderBy(col(tsCol), col("event_id"))
     val prev = lag(col(tsCol), 1).over(byUser)
@@ -33,22 +36,26 @@ object Sessionize {
 
   /** Per-session summary: bounds, event count, exact value sum (decimal
     * accumulation -> order-independent, oracle-safe). */
-  def sessionSummary(events: DataFrame, userCol: String, tsCol: String,
-                     valueCol: String, gapSeconds: Long): DataFrame =
-    withSessionIds(events, userCol, tsCol, gapSeconds)
+  def sessionSummary(events: DataFrame): DataFrame = {
+    val userCol = "user_id"
+    val valueCol = "value"
+    withSessionIds(events)
       .groupBy(col(userCol), col("session_seq"))
       .agg(
-        min(col(tsCol)).as("session_start"),
-        max(col(tsCol)).as("session_end"),
+        min(col(TsCol)).as("session_start"),
+        max(col(TsCol)).as("session_end"),
         count(lit(1)).as("n_events"),
         sum(col(valueCol).cast("decimal(38,6)")).cast("double").as("sum_value"))
+  }
 
   /** Tumbling-window event aggregate (hauser bundle analog, T2): events
     * bucketed to `date_trunc(unit)` per event_type. */
-  def tumblingAgg(events: DataFrame, tsCol: String, unit: String): DataFrame =
+  def tumblingAgg(events: DataFrame): DataFrame = {
+    val unit = "hour"
     events.groupBy(
-      date_trunc(unit, col(tsCol)).as("window_start"),
+      date_trunc(unit, col(TsCol)).as("window_start"),
       col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(38,6)")).cast("double").as("sum_value"))
+  }
 }

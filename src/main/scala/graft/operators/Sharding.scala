@@ -43,8 +43,11 @@ object Sharding {
     * lexicographic key range each shard file will span. One
     * partial-combined aggregation — the manifest of a 100 TB write is a
     * nShards-row result computed without ever collecting the corpus. */
-  def shardStats(df: DataFrame, idCol: String, nShards: Int,
-                 sizeCol: String, srcCol: String): DataFrame =
+  def shardStats(df: DataFrame): DataFrame = {
+    val idCol = "doc_id"
+    val nShards = 16
+    val sizeCol = "n_chars"
+    val srcCol = "source"
     assignShards(df, idCol, nShards)
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"),
@@ -52,6 +55,7 @@ object Sharding {
         count_distinct(col(srcCol)).as("n_sources"),
         min(col("shard_key")).as("first_key"),
         max(col("shard_key")).as("last_key"))
+  }
 
   /** Write the corpus as `nShards` sorted parquet shard directories
     * (`shard=K/`). One shuffle (hash on `shard`), local within-shard sort,
@@ -73,7 +77,8 @@ object Sharding {
     * contract must be total) break to the larger node id via the
     * "#<node>" suffix inside one fixed-width max-string reduction —
     * a pure map-side projection, `nNodes` hashes per key. */
-  def hrwNode(idCol: String, nNodes: Int): Column = {
+  def hrwNode(nNodes: Int): Column = {
+    val idCol = "k"
     require(nNodes > 0 && nNodes < 100)
     val tagged = transform(sequence(lit(0), lit(nNodes - 1)),
       i => concat(
@@ -92,12 +97,15 @@ object Sharding {
     * reshard: the answer is the data-motion bill. Both assignments are
     * map-side md5 projections over the distinct key table; one
     * partial-combined aggregate; 2-row output. */
-  def reshardAudit(df: DataFrame, idCol: String, n0: Int, n1: Int)
+  def reshardAudit(df: DataFrame)
       : DataFrame = {
+    val idCol = "doc_id"
+    val n0 = 8
+    val n1 = 9
     val keys = df.select(col(idCol).cast("string").as("k")).distinct()
     val agg1 = keys.select(
         (shardOf("k", n0) =!= shardOf("k", n1)).as("mod_moved"),
-        (hrwNode("k", n0) =!= hrwNode("k", n1)).as("hrw_moved"))
+        (hrwNode(n0) =!= hrwNode(n1)).as("hrw_moved"))
       .agg(count(lit(1)).cast("long").as("n_keys"),
         sum(when(col("mod_moved"), 1L).otherwise(0L)).cast("long")
           .as("mod_m"),

@@ -24,6 +24,10 @@ import graft.functions.GraftFunctions
   * stored model.
   */
 object Similarity {
+  private val VecCol = "embedding"
+  private val LabelCol = "label"
+  private val K = 5
+  private val IdCol = "vec_id"
 
   /** Exact decimal-accumulated cosine — order-independent, engine-portable
     * (matches a DuckDB oracle bit-for-bit); use for correctness paths.
@@ -146,13 +150,13 @@ object Similarity {
     * once per token. Rows whose token array is empty/null are dropped
     * (no content to embed). Counts ≤ 2²⁴ are exact in the float32
     * output. */
-  def hashEmbeddings(df: DataFrame, idCol: String, toksCol: String,
-                     dim: Int): DataFrame = {
+  def hashEmbeddings(df: DataFrame, dim: Int): DataFrame = {
+    val toksCol = "toks"
     require(dim > 0)
     val bucket = pmod(conv(substring(md5(col("tok")), 1, 8), 16, 10)
       .cast("long"), lit(dim.toLong))
     val counts = df
-      .select(col(idCol).as("id"), explode_outer(col(toksCol)).as("tok"))
+      .select(col(IdCol).as("id"), explode_outer(col(toksCol)).as("tok"))
       .filter(col("tok").isNotNull)
       .groupBy(col("id"), bucket.as("b"))
       .agg(count(lit(1)).cast("double").as("c"))
@@ -211,7 +215,8 @@ object Similarity {
     * between engines); all arithmetic is IEEE double, so the int codes are
     * engine-portable and oracle-checkable. Zero vectors quantize to zeros
     * with scale 0. */
-  def quantizeInt8(vec: Column): Column = {
+  def quantizeInt8: Column = {
+    val vec = col("embedding")
     val absMax = array_max(transform(vec, x => abs(x.cast("double"))))
     val scale = absMax / lit(127.0)
     struct(
@@ -232,10 +237,10 @@ object Similarity {
     * independent), the z-score itself is IEEE double with one fixed op
     * order, so the output is oracle-exact; constant dimensions
     * (std = 0) standardize to 0. Returns (id, pos, z) rows. */
-  def whiten(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
+  def whiten(emb: DataFrame): DataFrame = {
     val el = emb
-      .select(col(idCol), posexplode(col(vecCol)).as(Seq("pos0", "v")))
-      .select(col(idCol), (col("pos0") + 1).cast("long").as("pos"),
+      .select(col(IdCol), posexplode(col(VecCol)).as(Seq("pos0", "v")))
+      .select(col(IdCol), (col("pos0") + 1).cast("long").as("pos"),
         col("v").cast("double").as("x"))
     val stats = el.groupBy(col("pos"))
       .agg(
@@ -247,7 +252,7 @@ object Similarity {
         sqrt(col("ex2") - col("mean") * col("mean")).as("std"))
     el.join(Hints.boundedBroadcast(stats, "vector_dim_domain"),
       Seq("pos"))
-      .select(col(idCol), col("pos"),
+      .select(col(IdCol), col("pos"),
         when(col("std") === 0, lit(0.0))
           .otherwise(round((col("x") - col("mean")) / col("std"), 9))
           .as("z"))
@@ -309,8 +314,7 @@ object Similarity {
     * equi-join on cell id — per-query work is nprobe cell populations.
     * Cell assignment and the final ranking are decimal-exact
     * (oracle-bitwise). Reads `vec_id` and `embedding`. */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, seeds: DataFrame,
-              k: Int, nprobe: Int = 1): DataFrame = {
+  def ivfTopK(corpus: DataFrame, queries: DataFrame, seeds: DataFrame, nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
     val centLit = centroidLiteral(seeds, "vec_id", "embedding")
     // Map-side assignment ([[graft.functions.NearestCells]]): the two-phase
@@ -343,7 +347,7 @@ object Similarity {
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
       .join(Hints.boundedBroadcast(
-        partialTopK(candidates, col("fsim"), k + 15), "topk_capped"),
+        partialTopK(candidates, col("fsim"), K + 15), "topk_capped"),
         Seq("neighbor_id"))
       // one row per query even under nprobe > 1 probed cells
       .join(Hints.boundedBroadcast(q.select(col("query_id"), col("q_vec"))
@@ -351,7 +355,7 @@ object Similarity {
         Seq("query_id"))
       .withColumn("sim", round(cosineExact(col("q_vec"), col("c_vec")), 6))
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= K)
       .select(col("query_id"), col("neighbor_id"), col("sim"),
         col("rk").cast("int").as("rk"))
   }
@@ -401,8 +405,8 @@ object Similarity {
     * against [[bruteForceTopK]], not on exact neighbor sets. */
   /** PQ code word for a vector column: one codegen'd argmax per subspace
     * — a pure projection. */
-  private def pqCodesCol(vecCol: Column,
-                         codebooks: Array[Array[Array[Float]]]): Column = {
+  private def pqCodesCol(codebooks: Array[Array[Array[Float]]]): Column = {
+    val vecCol = col("c_vec")
     val sub = codebooks(0)(0).length
     def centLit(j: Int): Column = typedlit(codebooks(j).zipWithIndex.map {
       case (v, i) => (i.toLong, v.toSeq) }.toSeq)
@@ -415,9 +419,9 @@ object Similarity {
 
   /** Per-query ADC lookup tables: (luts, qnorm) columns for a query
     * vector. */
-  private def pqQuerySide(vecCol: Column,
-                          codebooks: Array[Array[Array[Float]]])
+  private def pqQuerySide(codebooks: Array[Array[Array[Float]]])
       : (Column, Column) = {
+    val vecCol = col("q_vec")
     val sub = codebooks(0)(0).length
     val cbLit = typedlit(codebooks.map(_.map(_.toSeq).toSeq).toSeq)
     val dotd = (a: Column, b: Column) => aggregate(
@@ -450,9 +454,9 @@ object Similarity {
     val c = Materializer.Local(corpus
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
       .select(col("neighbor_id"),
-        pqCodesCol(col("c_vec"), codebooks).as("codes")))
+        pqCodesCol(codebooks).as("codes")))
     val nsqLit = pqNsqLit(codebooks)
-    val (lutsCol, qnormCol) = pqQuerySide(col("q_vec"), codebooks)
+    val (lutsCol, qnormCol) = pqQuerySide(codebooks)
     val q = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
       .withColumn("luts", lutsCol)
@@ -495,7 +499,7 @@ object Similarity {
       .select(col("neighbor_id"),
         element_at(GraftFunctions.nearest_cells(col("c_vec"), centLit,
           probes = 1, exact = false), 1).as("cell_id"),
-        pqCodesCol(col("c_vec"), codebooks).as("codes"))
+        pqCodesCol(codebooks).as("codes"))
   }
 
   /** Search an [[ivfPqIndex]] (in-memory or parquet-loaded): each query
@@ -511,7 +515,7 @@ object Similarity {
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "empty PQ codebook")
     val centLit = centroidLiteral(seeds, "vec_id", "embedding")
-    val (lutsCol, qnormCol) = pqQuerySide(col("q_vec"), codebooks)
+    val (lutsCol, qnormCol) = pqQuerySide(codebooks)
     val q = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
       .withColumn("luts", lutsCol)
@@ -557,7 +561,7 @@ object Similarity {
     * so index size is unchanged and a (query, neighbor) pair still occurs
     * at most once — recall rises without any dedup step. 8 hyperplanes;
     * reads `vec_id` and `embedding`. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+  def lshTopK(corpus: DataFrame, queries: DataFrame,
               probeBits: Int = 0): DataFrame = {
     val planes = 8
     require(probeBits >= 0 && probeBits <= 1, "probeBits must be 0 or 1")
@@ -583,7 +587,7 @@ object Similarity {
       Hints.boundedBroadcast(q, "query_set_contract"), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", round(cosineExact(col("q_vec"), col("c_vec")), 6))
-    partialTopK(scored, col("sim"), k)
+    partialTopK(scored, col("sim"), K)
       .select(col("query_id"), col("neighbor_id"),
         col("hsim").as("sim"), col("hrk").as("rk"))
   }
@@ -604,25 +608,24 @@ object Similarity {
     * `approx_percentile`, the one documented estimator substitution).
     * The corpus never joins itself. Returns (id, dist, fence) for
     * flagged rows. */
-  def centroidOutliers(emb: DataFrame, idCol: String, vecCol: String,
-                       pct: Double = 0.99): DataFrame = {
+  def centroidOutliers(emb: DataFrame, pct: Double = 0.99): DataFrame = {
     val el = emb
-      .select(col(idCol), posexplode(col(vecCol)).as(Seq("pos0", "v")))
-      .select(col(idCol), (col("pos0") + 1).cast("long").as("pos"),
+      .select(col(IdCol), posexplode(col(VecCol)).as(Seq("pos0", "v")))
+      .select(col(IdCol), (col("pos0") + 1).cast("long").as("pos"),
         col("v").cast("double").as("x"))
     val centroid = el.groupBy(col("pos"))
       .agg(round(sum(col("x").cast("decimal(38,20)")).cast("double")
         / count(lit(1)), 9).as("c"))
     val dist = el.join(
       Hints.boundedBroadcast(centroid, "vector_dim_domain"), Seq("pos"))
-      .groupBy(col(idCol))
+      .groupBy(col(IdCol))
       .agg(round(sqrt(sum(((col("x") - col("c")) * (col("x") - col("c")))
         .cast("decimal(38,20)")).cast("double")), 6).as("dist"))
     val fence = dist.agg(
       expr(s"percentile(dist, ${pct})").as("fence"))
     dist.crossJoin(broadcast(fence))
       .filter(col("dist") > col("fence"))
-      .select(col(idCol), col("dist"), round(col("fence"), 6).as("fence"))
+      .select(col(IdCol), col("dist"), round(col("fence"), 6).as("fence"))
   }
 
   /** Simplified (centroid-based) silhouette per cluster label — the
@@ -642,12 +645,11 @@ object Similarity {
     * corpus-wide exchange is the final per-label partial-combined mean
     * (k rows). Distances round(6) before the a/b comparison so the
     * ranking can never hinge on a cross-engine ulp. */
-  def simplifiedSilhouette(emb: DataFrame, idCol: String, vecCol: String,
-                           labelCol: String): DataFrame = {
+  def simplifiedSilhouette(emb: DataFrame): DataFrame = {
     val dec = "decimal(38,20)"
     val el = emb
-      .select(col(labelCol).as("clabel"),
-        posexplode(col(vecCol)).as(Seq("pos", "v")))
+      .select(col(LabelCol).as("clabel"),
+        posexplode(col(VecCol)).as(Seq("pos", "v")))
       .select(col("clabel"), col("pos"), col("v").cast("double").as("x"))
     val cent = el.groupBy(col("clabel"), col("pos"))
       .agg(round(sum(col("x").cast(dec)).cast("double")
@@ -669,10 +671,10 @@ object Similarity {
     // which is exactly what the guard rejects without this stamp)
     val dists = emb.crossJoin(
       Hints.boundedBroadcast(all, "cluster_domain_payload"))
-      .select(col(idCol), col(labelCol).as("plabel"),
+      .select(col(IdCol), col(LabelCol).as("plabel"),
         transform(col("cents"), ct =>
           struct(ct.getField("clabel").as("clabel"),
-            d2(col(vecCol), ct.getField("cv")).as("d"))).as("ds"))
+            d2(col(VecCol), ct.getField("cv")).as("d"))).as("ds"))
     val s = dists.select(col("plabel"),
       element_at(filter(col("ds"),
         x => x.getField("clabel") === col("plabel")), 1)
@@ -703,15 +705,15 @@ object Similarity {
     * (label, dim) partial-combined exchange of exact sums; everything
     * after runs on the labels×dims table with per-cell double algebra
     * round(9) re-summed in DECIMAL. */
-  def fisherSeparation(emb: DataFrame, labelCol: String, vecCol: String)
+  def fisherSeparation(emb: DataFrame)
       : DataFrame = {
     val x6 = round(col("x").cast("double"), 6).cast("decimal(15,6)")
     // pinned: the (label, dim) cell table feeds the dim totals, the
     // scatter projection AND the k/d driver scalars — unpinned, the
     // corpus explode would run four times
     val cell = Materializer.Local(emb
-      .select(col(labelCol).as("label"),
-        posexplode(col(vecCol)).as(Seq("pos", "x")))
+      .select(col(LabelCol).as("label"),
+        posexplode(col(VecCol)).as(Seq("pos", "x")))
       .select(col("label"), col("pos"), x6.as("x"))
       .groupBy(col("label"), col("pos"))
       .agg(count(lit(1)).as("n_c"), sum(col("x")).as("s_c"),
@@ -773,11 +775,10 @@ object Similarity {
     * round(12) normalization term for term, so the oracle's full-matrix
     * replay still matches bit for bit (measured 8.6 -> ~2.8 s at
     * sf0.1). */
-  def pcaTopComponent(emb: DataFrame, idCol: String,
-                      vecCol: String): DataFrame = {
+  def pcaTopComponent(emb: DataFrame): DataFrame = {
     val iters = 5
     val spark = emb.sparkSession
-    val mo = emb.select(col(vecCol).cast("array<float>"))
+    val mo = emb.select(col(VecCol).cast("array<float>"))
       .as[Array[Float]](org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[Array[Float]]())
       .select(graft.functions.SecondMomentAgg.toColumn)
@@ -831,25 +832,26 @@ object Similarity {
     * BEFORE the min over centers and the (dist desc, id asc) argmax —
     * nothing ever ranks on an unpinned ulp. Returns (rk, id,
     * dist_at_pick) with dist 0.0 for the seed (= lowest id). */
-  def kCenterCoreset(emb: DataFrame, idCol: String, vecCol: String,
-                     k: Int): DataFrame = {
+  def kCenterCoreset(emb: DataFrame, k: Int): DataFrame = {
     require(k >= 1)
     val spark = emb.sparkSession
     val dec = "decimal(38,20)"
-    def sqDist(v: Column, center: Seq[Float]): Column =
+    def sqDist(center: Seq[Float]): Column = {
+      val v = col(VecCol)
       round(aggregate(zip_with(v, typedlit(center),
         (x, c) => ((x.cast("double") - c.cast("double"))
           * (x.cast("double") - c.cast("double"))).cast(dec)),
         lit(0).cast(dec), (acc, t) => (acc + t).cast(dec))
         .cast("double"), 6)
-    val seed = emb.select(col(idCol), col(vecCol))
-      .orderBy(col(idCol)).limit(1).collect()(0)
+    }
+    val seed = emb.select(col(IdCol), col(VecCol))
+      .orderBy(col(IdCol)).limit(1).collect()(0)
     var centers = Vector((seed.getLong(0), seed.getSeq[Float](1), 0.0))
     for (_ <- 1 until k) {
-      val ds = centers.map(c => sqDist(col(vecCol), c._2))
+      val ds = centers.map(c => sqDist(c._2))
       val minD = if (ds.size == 1) ds.head else least(ds: _*)
-      val next = emb.select(col(idCol), col(vecCol), minD.as("md"))
-        .orderBy(col("md").desc, col(idCol).asc).limit(1).collect()(0)
+      val next = emb.select(col(IdCol), col(VecCol), minD.as("md"))
+        .orderBy(col("md").desc, col(IdCol).asc).limit(1).collect()(0)
       centers = centers :+
         ((next.getLong(0), next.getSeq[Float](1), next.getDouble(2)))
     }
@@ -882,15 +884,16 @@ object Similarity {
     * explode + coordinate equi-join — never a cartesian) and the CC
     * rounds ride the bounded cell table, and the per-point labeling is
     * a broadcast join of that table back onto the stream. */
-  def gridDensityClusters(points: DataFrame, idCol: String, xCol: String,
-                          yCol: String, eps: Double, minPts: Long)
+  def gridDensityClusters(points: DataFrame, eps: Double, minPts: Long)
       : DataFrame = {
+    val xCol = "x"
+    val yCol = "y"
     require(eps > 0 && minPts >= 1)
     // encoded cell key: (cx + 2^20) * 2^21 + (cy + 2^20) — collision-free
     // for |cx|,|cy| < 2^20, ordered lexicographically by (cx, cy)
     val B = 1L << 20
     val M = 1L << 21
-    val withCell = points.select(col(idCol).as("pid"),
+    val withCell = points.select(col(IdCol).as("pid"),
       floor(col(xCol).cast("double") / lit(eps)).cast("long").as("cx"),
       floor(col(yCol).cast("double") / lit(eps)).cast("long").as("cy"))
     val cells = Materializer.Local(withCell.groupBy(col("cx"), col("cy"))

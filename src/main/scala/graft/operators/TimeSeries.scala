@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions._
   * map-side, so the raw event stream shuffles once at hour granularity.
   */
 object TimeSeries {
+  private val KeyCol = "event_type"
+  private val TsCol = "ts"
 
   /** Hourly-bucketed, gap-filled, linearly interpolated series per key.
     *
@@ -31,11 +33,11 @@ object TimeSeries {
     * series endpoints are known buckets by construction, so every gap is
     * interior). Returns (key, hour, n, level, filled).
     */
-  def gapFillHourly(points: DataFrame, keyCol: String, tsCol: String,
-                    valCol: String): DataFrame = {
+  def gapFillHourly(points: DataFrame): DataFrame = {
+    val valCol = "value"
     val base = points
-      .groupBy(col(keyCol).as("key"),
-        date_trunc("hour", col(tsCol)).as("hour"))
+      .groupBy(col(KeyCol).as("key"),
+        date_trunc("hour", col(TsCol)).as("hour"))
       .agg(count(lit(1)).as("n"),
         round(sum(col(valCol).cast("decimal(38,6)")).cast("double")
           / count(lit(1)).cast("double"), 6).as("v"))
@@ -74,19 +76,21 @@ object TimeSeries {
     * id), so replays produce identical history. Both windows ride ONE
     * entity-keyed exchange; no global sort.
     */
-  def scd2History(changes: DataFrame, keyCol: String, tsCol: String,
-                  stateCol: String, tieCol: String): DataFrame = {
+  def scd2History(changes: DataFrame): DataFrame = {
+    val stateCol = "event_type"
+    val tieCol = "event_id"
+    val keyCol = "user_id"
     val w = Window.partitionBy(col(keyCol))
-      .orderBy(col(tsCol), col(tieCol))
+      .orderBy(col(TsCol), col(tieCol))
     val marked = changes
       .withColumn("prev_state", lag(col(stateCol), 1).over(w))
       .filter(col("prev_state").isNull
         || !(col("prev_state") <=> col(stateCol)))
     marked
-      .withColumn("valid_to", lead(col(tsCol), 1).over(w))
+      .withColumn("valid_to", lead(col(TsCol), 1).over(w))
       .withColumn("version", row_number().over(w).cast("int"))
       .select(col(keyCol), col(stateCol).as("state"),
-        col(tsCol).as("valid_from"), col("valid_to"),
+        col(TsCol).as("valid_from"), col("valid_to"),
         col("valid_to").isNull.as("is_current"), col("version"))
   }
 
@@ -105,13 +109,13 @@ object TimeSeries {
     * medians are the exact q51-pinned percentile; slope round(6) before
     * the intercept pass so both engines subtract identical bits.
     * Returns (key, n_hours, slope, intercept). */
-  def theilSenTrend(points: DataFrame, keyCol: String, tsCol: String)
+  def theilSenTrend(points: DataFrame)
       : DataFrame = {
     // pinned: the hourly table feeds both pair sides and the intercept
     // pass — unpinned, the corpus aggregation would run three times
     val abs0 = Materializer.Local(points
-      .groupBy(col(keyCol).as("key"),
-        date_trunc("hour", col(tsCol)).as("hour"))
+      .groupBy(col(KeyCol).as("key"),
+        date_trunc("hour", col(TsCol)).as("hour"))
       .agg(count(lit(1)).as("n"))
       .select(col("key"),
         (unix_timestamp(col("hour")) / 3600L).cast("long").as("xa"),
@@ -152,13 +156,12 @@ object TimeSeries {
     * back over the hourly table. Variance from exact longs in one
     * double op order, round(6); population σ (the profile is the whole
     * window, not a sample). */
-  def seasonalAnomalies(points: DataFrame, keyCol: String,
-                        tsCol: String): DataFrame = {
+  def seasonalAnomalies(points: DataFrame): DataFrame = {
     val z = 3.0
     // pinned: the hourly table feeds the profile AND the flag join
     val base = Materializer.Local(points
-      .groupBy(col(keyCol).as("key"),
-        date_trunc("hour", col(tsCol)).as("hour"))
+      .groupBy(col(KeyCol).as("key"),
+        date_trunc("hour", col(TsCol)).as("hour"))
       .agg(count(lit(1)).as("n"))
       .withColumn("hod", hour(col("hour")).cast("int")))
     val prof = base.groupBy(col("key"), col("hod"))
@@ -205,14 +208,14 @@ object TimeSeries {
     * broadcast back (the q158 idiom); windows are key-partitioned and
     * calendar-bounded. Constant series (σ = 0) carry no shift signal
     * and are dropped. */
-  def cusumChangepoints(points: DataFrame, keyCol: String, tsCol: String)
+  def cusumChangepoints(points: DataFrame)
       : DataFrame = {
     val slack = 0.5
     val threshold = 4.0
     // pinned: the hourly table feeds the profile AND the scored series
     val base = Materializer.Local(points
-      .groupBy(col(keyCol).as("key"),
-        date_trunc("hour", col(tsCol)).as("hour"))
+      .groupBy(col(KeyCol).as("key"),
+        date_trunc("hour", col(TsCol)).as("hour"))
       .agg(count(lit(1)).as("n")))
     val prof = base.groupBy(col("key"))
       .agg(count(lit(1)).as("cnt"), sum(col("n")).as("s"),
@@ -264,12 +267,12 @@ object TimeSeries {
     * covers (a bounded explode), then one (user, day) distinct +
     * per-day count. No window function, no range self-join; every
     * aggregate partial-combines. */
-  def activeUsers(events: DataFrame, tsCol: String,
-                  userCol: String): DataFrame = {
+  def activeUsers(events: DataFrame): DataFrame = {
+    val userCol = "user_id"
     val window = 7
     // pinned: the user-day table feeds DAU, the fan-out, and the spine
     val ud = Materializer.Local(events
-      .select(col(userCol).as("u"), to_date(col(tsCol)).as("day"))
+      .select(col(userCol).as("u"), to_date(col(TsCol)).as("day"))
       .distinct())
     val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val wau = ud
@@ -302,13 +305,13 @@ object TimeSeries {
     * exp(Σ ln) identity: per-step factors ln(1 − d/n) round(9)
     * accumulate in DECIMAL(38,9) (order-proof), one exp at the end,
     * round(6). */
-  def kaplanMeierRetention(events: DataFrame, userCol: String,
-                           tsCol: String): DataFrame = {
+  def kaplanMeierRetention(events: DataFrame): DataFrame = {
+    val userCol = "unit"
     val censorDays = 7
     val per = events
       .groupBy(col(userCol).as("u"))
-      .agg(to_date(min(col(tsCol))).as("d0"),
-        to_date(max(col(tsCol))).as("d1"))
+      .agg(to_date(min(col(TsCol))).as("d0"),
+        to_date(max(col(TsCol))).as("d1"))
     // pinned: the lifetime histogram feeds the churn rows AND the
     // at-risk suffix sums
     val lt = Materializer.Local(per
@@ -356,11 +359,11 @@ object TimeSeries {
     * entity-partitioned window (entity-bounded state), then mean/σ
     * come from exact integer sums partial-combined per entity — one
     * double op order, no second pass. */
-  def interEventBurstiness(events: DataFrame, entityCol: String,
-                           tsCol: String): DataFrame = {
+  def interEventBurstiness(events: DataFrame): DataFrame = {
+    val entityCol = "user_id"
     val w = Window.partitionBy(col("entity")).orderBy(col("ts"))
     val gaps = events
-      .select(col(entityCol).as("entity"), col(tsCol).as("ts"))
+      .select(col(entityCol).as("entity"), col(TsCol).as("ts"))
       .withColumn("prev", lag(col("ts"), 1).over(w))
       .filter(col("prev").isNotNull)
       .select(col("entity"),
@@ -401,13 +404,13 @@ object TimeSeries {
     * aggregate of DECIMAL(38,6)-cast detrended values broadcast back.
     * Residual = n − trend − seasonal in one pinned op order,
     * round(6). */
-  def stlDecompose(points: DataFrame, keyCol: String, tsCol: String)
+  def stlDecompose(points: DataFrame)
       : DataFrame = {
     val period = 24
     val half = period / 2
     val base = points
-      .groupBy(col(keyCol).as("key"),
-        date_trunc("hour", col(tsCol)).as("hour"))
+      .groupBy(col(KeyCol).as("key"),
+        date_trunc("hour", col(TsCol)).as("hour"))
       .agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(col("key")).orderBy(col("hour"))
       .rowsBetween(-half, half - 1)
@@ -454,11 +457,10 @@ object TimeSeries {
     * hours it influences (bounded explode, the q160 shape), one
     * (key, hour) partial-combined sum, one join back to attach the
     * actual hour's count. */
-  def ewmaHourly(events: DataFrame, keyCol: String,
-                 tsCol: String): DataFrame = {
+  def ewmaHourly(events: DataFrame): DataFrame = {
     val window = 24 // 2^window must fit a long
     val hourly = Materializer.Local(events
-      .groupBy(col(keyCol).as("key"), date_trunc("hour", col(tsCol))
+      .groupBy(col(KeyCol).as("key"), date_trunc("hour", col(TsCol))
         .as("hour"))
       .agg(count(lit(1)).as("n"))
       .withColumn("eh", unix_timestamp(col("hour"))))

@@ -18,8 +18,8 @@ object TopK {
     * Returns (groupCol, idCol, score, rk). Payload columns re-attach to
     * the tiny survivor set with a broadcast join, per the TopKAgg
     * contract — they must not ride through the heap. */
-  def groupTopK(df: DataFrame, groupCol: String, scoreCol: Column,
-                idCol: String, k: Int): DataFrame = {
+  def groupTopK(df: DataFrame, groupCol: String, scoreCol: Column, k: Int): DataFrame = {
+    val idCol = "doc_id"
     val agg = udaf(new graft.functions.TopKAgg(k))
     df.groupBy(col(groupCol))
       .agg(agg(scoreCol, col(idCol)).as("top"))
@@ -44,8 +44,8 @@ object TopK {
     * then checks `mgt ≥ y OR mge > y` against the BROADCAST grid —
     * one map-side join, domination decided without ever forming a
     * pair. */
-  def paretoFrontier(df: DataFrame, idCol: String, xCol: Column,
-                     yCol: Column): DataFrame = {
+  def paretoFrontier(df: DataFrame, xCol: Column, yCol: Column): DataFrame = {
+    val idCol = "doc_id"
     import org.apache.spark.sql.expressions.Window
     val pts = df.select(col(idCol), xCol.cast("long").as("x"),
       round(yCol, 6).as("y"))

@@ -71,11 +71,14 @@ object Urls {
     * aggregate is partial-combined on the canonical key, so the shuffle
     * carries one row per distinct canonical URL per map partition, not one
     * per fetched page. */
-  def canonicalDedup(df: DataFrame, idCol: String, urlCol: String)
-      : DataFrame =
+  def canonicalDedup(df: DataFrame)
+      : DataFrame = {
+    val idCol = "doc_id"
+    val urlCol = "url"
     df.select(col(idCol).cast("long").as("id"),
         canonical(col(urlCol)).as("canonical_url"))
       .groupBy(col("canonical_url"))
       .agg(min(col("id")).as("keeper_id"),
         count(lit(1)).as("n_variants"))
+  }
 }

@@ -22,8 +22,7 @@ private[graft] object DedupQueries {
       // group-by and yields 22 groups at sf0.01.
       Dedup.exactDuplicateGroups(
           t(s, dir, "documents")
-            .withColumn("text", substring(col("text"), 1, 64)),
-          "doc_id", "text")
+            .withColumn("text", substring(col("text"), 1, 64)))
         .orderBy(col("keep_id"))
     }),
       """SELECT md5(k) AS text_hash, min(doc_id) AS keep_id,
@@ -33,7 +32,7 @@ private[graft] object DedupQueries {
         |ORDER BY keep_id""".stripMargin),
 
     QuerySpec("q35_dedup_drop", ((s, dir) => {
-      Dedup.dropExactDuplicates(t(s, dir, "documents"), "doc_id", "text")
+      Dedup.dropExactDuplicates(t(s, dir, "documents"))
         .agg(count(lit(1)).as("n_unique"))
     }),
       "SELECT COUNT(*) AS n_unique FROM (SELECT DISTINCT text FROM documents) s"),
@@ -44,8 +43,8 @@ private[graft] object DedupQueries {
       val b = d.select(col("doc_id").as("b_id"), col("text").as("b_text"))
       a.join(b, col("b_id") === col("a_id") + 1)
         .select(col("a_id"), col("b_id"),
-          round(Dedup.jaccardTokens(col("a_text"), col("b_text")), 6).as("sim"),
-          round(Dedup.jaccardShingles(col("a_text"), col("b_text"), 3), 6)
+          round(Dedup.jaccardTokens, 6).as("sim"),
+          round(Dedup.jaccardShingles, 6)
             .as("sim3"))
         .orderBy(col("a_id"))
     }),
@@ -77,7 +76,7 @@ private[graft] object DedupQueries {
         |ORDER BY a_id""".stripMargin),
 
     QuerySpec("q37_dedup_minhash_lsh", ((s, dir) => {
-      Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
+      Dedup.minhashLshPairs(t(s, dir, "documents"),
           bands = 4, threshold = 0.5, fast = false)
         .orderBy(col("a_id"), col("b_id"))
     }),
@@ -111,7 +110,7 @@ private[graft] object DedupQueries {
     QuerySpec("q39_dedup_minhash_fast", ((s, dir) => {
       // the seeded-FNV scale path of q37; oracle = ground-truth all-pairs
       // Jaccard (equality doubles as an LSH recall=1.0 check on this data)
-      Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
+      Dedup.minhashLshPairs(t(s, dir, "documents"),
           bands = 4, threshold = 0.5, fast = true)
         .orderBy(col("a_id"), col("b_id"))
     }),
@@ -148,8 +147,7 @@ private[graft] object DedupQueries {
       // connected components of the confirmed near-dup pair graph (the
       // keep-one-representative step); pairs from the fast-FNV LSH path,
       // whose confirmed set equals ground truth on this corpus (q39)
-      val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id",
-        "text", bands = 4, threshold = 0.5,
+      val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"), bands = 4, threshold = 0.5,
         fast = true)
       Dedup.nearDupClusters(pairs).orderBy(col("doc_id"))
     }),
@@ -193,10 +191,9 @@ private[graft] object DedupQueries {
       // cluster, then min id among the maxima) — no cluster-partitioned
       // window, so a million-member spam cluster can't funnel one task.
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
+      val pairs = Dedup.minhashLshPairs(docs,
         bands = 4, threshold = 0.5, fast = true)
-      Dedup.keepBest(docs, pairs, "doc_id",
-          TextAnalysis.qualityScore(col("text")))
+      Dedup.keepBest(docs, pairs, TextAnalysis.qualityScore)
         .orderBy(col("cluster_id"))
     }),
       (keepBestLabSql +
@@ -212,7 +209,7 @@ private[graft] object DedupQueries {
     QuerySpec("q58_simhash_pairs", ((s, dir) => {
       // block-banded SimHash candidates + exact Hamming verify
       // (recall 1.0 for hamming <= 3 by pigeonhole over 4 blocks)
-      Dedup.simhashNearDupPairs(t(s, dir, "documents"), "doc_id", "text")
+      Dedup.simhashNearDupPairs(t(s, dir, "documents"))
         .orderBy(col("a_id"), col("b_id"))
     }),
       // all-pairs hamming <= 3 IS the banded result: 4-block banding has
@@ -277,8 +274,7 @@ private[graft] object DedupQueries {
       // would DROP, and on whose account. threshold 0.4 for the same
       // reason as q42 (synthetic embeddings are near-orthogonal; the
       // positive path must be exercised at verify scale)
-      Dedup.semanticDedupDrops(t(s, dir, "embeddings"), "vec_id",
-          "embedding", planes = 6, threshold = 0.4)
+      Dedup.semanticDedupDrops(t(s, dir, "embeddings"), planes = 6, threshold = 0.4)
         .select(col("id").as("vec_id"), col("dup_of"), col("n_earlier"))
         .orderBy(col("vec_id"))
     }),
@@ -310,8 +306,7 @@ private[graft] object DedupQueries {
       // (near-orthogonal synthetic embeddings; the positive path must
       // be exercised at verify scale: 34 raw hits at sf0.01).
       val emb = t(s, dir, "embeddings")
-      Dedup.semanticContamination(emb, emb.filter(col("vec_id") < 30),
-          "vec_id", "embedding", threshold = 0.35)
+      Dedup.semanticContamination(emb, emb.filter(col("vec_id") < 30), threshold = 0.35)
         .select(col("id").as("vec_id"), col("n_hits"), col("best_eval"),
           col("sim"))
         .orderBy(col("vec_id"))
@@ -347,10 +342,8 @@ private[graft] object DedupQueries {
       // pairs(even-only) ∪ this result.
       val docs = t(s, dir, "documents")
       Dedup.minhashLshPairsIncremental(
-          Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
-            "doc_id", "text", bands = 4, fast = false),
-          Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 0),
-            "doc_id", "text", bands = 4, fast = false),
+          Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1), bands = 4, fast = false),
+          Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 0), bands = 4, fast = false),
           threshold = 0.5)
         .orderBy(col("a_id"), col("b_id"))
     }),
@@ -409,12 +402,10 @@ private[graft] object DedupQueries {
       val idxDir = new java.io.File(
         s".bench/q70_index_${corpusKey(dir)}").getAbsolutePath
       val idxPath = ensurePersistedIndex(idxDir, docs.count()) {
-        Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", bands = 4, fast = true)
+        Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 0), bands = 4, fast = true)
       }
       Dedup.minhashLshPairsIncremental(
-          Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
-            "doc_id", "text", bands = 4, fast = true),
+          Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1), bands = 4, fast = true),
           s.read.parquet(idxPath), threshold = 0.5)
         .orderBy(col("a_id"), col("b_id"))
     }),
@@ -449,8 +440,7 @@ private[graft] object DedupQueries {
       // returns zero rows at verify scale and the oracle match is vacuous;
       // 0.4 keeps the gate exercising the positive path (5 rows at sf0.01,
       // 57 at sf0.1) through the same bucket/verify machinery
-      Dedup.embeddingNearDupPairs(t(s, dir, "embeddings"), "vec_id",
-          "embedding", planes = 6, threshold = 0.4)
+      Dedup.embeddingNearDupPairs(t(s, dir, "embeddings"), planes = 6, threshold = 0.4)
         .orderBy(col("a_id"), col("b_id"))
     }),
       s"""WITH ${bucketCtes(6)},
@@ -482,10 +472,8 @@ private[graft] object DedupQueries {
       val docs = t(s, dir, "documents")
       val srcNum = expr("int(substring(source, 4))")
       Dedup.fuzzyJoin(
-          Dedup.minhashIndex(docs.filter(srcNum < 10),
-            "doc_id", "text", bands = 4, fast = false),
-          Dedup.minhashIndex(docs.filter(srcNum >= 10),
-            "doc_id", "text", bands = 4, fast = false),
+          Dedup.minhashIndex(docs.filter(srcNum < 10), bands = 4, fast = false),
+          Dedup.minhashIndex(docs.filter(srcNum >= 10), bands = 4, fast = false),
           threshold = 0.3)
         .orderBy(col("left_id"), col("right_id"))
     }),
@@ -546,17 +534,15 @@ private[graft] object DedupQueries {
       val idxDir = new java.io.File(s".bench/q108_index_$key").getAbsolutePath
       val nRows = docs.count()
       val idxPath = ensurePersistedIndex(idxDir, nRows) {
-        Dedup.minhashIndex(evens, "doc_id", "text",
-          bands = 4, fast = true)
+        Dedup.minhashIndex(evens, bands = 4, fast = true)
       }
       val labDir = new java.io.File(s".bench/q108_labels_$key").getAbsolutePath
       val labPath = ensurePersistedIndex(labDir, nRows) {
-        Dedup.nearDupClusters(Dedup.minhashLshPairs(evens, "doc_id", "text",
+        Dedup.nearDupClusters(Dedup.minhashLshPairs(evens,
           bands = 4, threshold = 0.5, fast = true))
       }
       val newPairs = Dedup.minhashLshPairsIncremental(
-        Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text", bands = 4, fast = true),
+        Dedup.minhashIndex(docs.filter(col("doc_id") % 2 === 1), bands = 4, fast = true),
         s.read.parquet(idxPath), threshold = 0.5)
       Dedup.nearDupClustersIncremental(s.read.parquet(labPath), newPairs)
         .orderBy(col("doc_id"))
@@ -616,8 +602,7 @@ private[graft] object DedupQueries {
         .otherwise(concat(lit("zz"),
           call_function("substring", base, lit(3), lit(10))))
       operators.EditJoin.editDistancePairs(
-          docs.select(col("doc_id").as("id"), str.as("str")),
-          "id", "str")
+          docs.select(col("doc_id").as("id"), str.as("str")))
         .orderBy(col("a_id"), col("b_id"))
     }),
       """WITH f AS (
@@ -655,7 +640,7 @@ private[graft] object DedupQueries {
       // bounded, so the shuffled attach is cheap; AQE still broadcasts
       // the map when it is genuinely small.
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", bands = 4,
+      val pairs = Dedup.minhashLshPairs(docs, bands = 4,
           threshold = 0.5, fast = false)
       val src = docs.select(col("doc_id"), col("source"))
       pairs
@@ -722,8 +707,7 @@ private[graft] object DedupQueries {
       // their rarest shingles; the oracle BRUTE-FORCES the n² space, so
       // this is a genuine recall differential, not a blocking replay.
       val docs = t(s, dir, "documents")
-      Dedup.prefixFilterJaccardPairs(docs, "doc_id", "text",
-          shingleN = 3, thetaNum = 1, thetaDen = 2)
+      Dedup.prefixFilterJaccardPairs(docs)
         .orderBy(col("a_id"), col("b_id"))
     }),
       // brute-force n² differential (the q141/q178 pattern): DuckDB scores
@@ -761,12 +745,10 @@ private[graft] object DedupQueries {
       // must pass). Both pair sets are bounded; the rollup is 3 scalars.
       val docs = t(s, dir, "documents")
       val exact = operators.Materializer.Local(
-        Dedup.prefixFilterJaccardPairs(docs, "doc_id", "text",
-          shingleN = 3, thetaNum = 1, thetaDen = 2)
+        Dedup.prefixFilterJaccardPairs(docs)
           .select(col("a_id"), col("b_id")))
       val lsh = operators.Materializer.Local(
-        Dedup.minhashLshPairs(docs, "doc_id", "text", bands = 4,
-            threshold = 0.5, fast = false)
+        Dedup.minhashLshPairs(docs, bands = 4, threshold = 0.5, fast = false)
           .select(col("a_id"), col("b_id")))
       val common = exact.join(lsh, Seq("a_id", "b_id"), "left_semi")
       exact.agg(count(lit(1)).as("n_exact"))
@@ -861,7 +843,7 @@ private[graft] object DedupQueries {
       // readout a dedup pipeline hands to curation: what each duplicate
       // family is, who contributes it, and which copy to keep.
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
+      val pairs = Dedup.minhashLshPairs(docs,
         bands = 4, threshold = 0.5, fast = true)
       val clusters = Dedup.nearDupClusters(pairs)
       val mem = clusters.join(
@@ -943,8 +925,7 @@ private[graft] object DedupQueries {
       // are salted-md5 functions of (term, seed), so DuckDB replays the
       // sampler draw-for-draw (round(9) requantization after every libm
       // call, arg-min tie-break on term asc).
-      Dedup.weightedMinhashPairs(t(s, dir, "documents"), "doc_id",
-          "text", k = 8, bands = 4)
+      Dedup.weightedMinhashPairs(t(s, dir, "documents"), k = 8, bands = 4)
         .orderBy(col("a_id"), col("b_id"))
     }),
       // Ioffe CWS replay: the same salted-md5 uniforms, Gamma(2,1) algebra
@@ -1052,11 +1033,10 @@ private[graft] object DedupQueries {
       // only broadcasts are 1-row aggregates.
       val docs = t(s, dir, "documents")
       val pairs = operators.Materializer.Local(
-        Dedup.minhashLshPairs(docs, "doc_id", "text", bands = 4,
-            threshold = 0.5, fast = true)
+        Dedup.minhashLshPairs(docs, bands = 4, threshold = 0.5, fast = true)
           .select(col("a_id"), col("b_id")))
       val asg = operators.Materializer.Local(
-        Dedup.clusterAwareSplit(docs, pairs, "doc_id"))
+        Dedup.clusterAwareSplit(docs, pairs))
       def audit(splitCol: String, m: String) = {
         val sa = asg.select(col("doc_id").as("a_id"), col(splitCol).as("sa"))
         val sb = asg.select(col("doc_id").as("b_id"), col(splitCol).as("sb"))
@@ -1149,11 +1129,11 @@ private[graft] object DedupQueries {
       // partial-combined aggregates; the overall shares ride a 1-row
       // broadcast.
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
+      val pairs = Dedup.minhashLshPairs(docs,
           bands = 4, threshold = 0.5, fast = true)
         .select(col("a_id"), col("b_id"))
       val asg = operators.Materializer.Local(
-        Dedup.clusterAwareSplit(docs, pairs, "doc_id")
+        Dedup.clusterAwareSplit(docs, pairs)
           .join(docs.select(col("doc_id"), col("source")), Seq("doc_id")))
       def tr(c: String) = sum(when(col(c) === "train", 1L).otherwise(0L))
       val per = asg.groupBy(col("source")).agg(
@@ -1242,8 +1222,7 @@ private[graft] object DedupQueries {
       // query shows what 0.3–0.8 would each have done). Banding recall
       // below the design threshold is part of the pinned semantics —
       // the oracle replays the identical signature/band/verify pipeline.
-      val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"),
-        "doc_id", "text", bands = 4,
+      val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"), bands = 4,
         threshold = 0.3, fast = false)
       Dedup.dedupThresholdSweep(pairs,
         Seq(0.3, 0.4, 0.5, 0.6, 0.7, 0.8))
@@ -1273,9 +1252,8 @@ private[graft] object DedupQueries {
           .when(col("doc_id") % 3 === 1, upper(col("text")))
           .otherwise(expr("replace(text, ' ', ', ')")).as("text"))
       val norm = injected.select(col("doc_id"),
-        TextAnalysis.normalizeForDedup(col("text")).as("text"))
-      Dedup.minhashLshPairs(norm, "doc_id", "text", bands = 4, threshold = 0.5,
-          fast = false)
+        TextAnalysis.normalizeForDedup.as("text"))
+      Dedup.minhashLshPairs(norm, bands = 4, threshold = 0.5, fast = false)
         .orderBy(col("a_id"), col("b_id"))
     }),
       // the scramble (accent/upper/re-punctuate by residue class), the
@@ -1312,16 +1290,14 @@ private[graft] object DedupQueries {
       // quality argmax) and the q311 integer recipe; the kept-id semi
       // join is UNHINTED (kept ids are SF-linear — one per cluster).
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
+      val pairs = Dedup.minhashLshPairs(docs,
         bands = 4, threshold = 0.5, fast = true)
-      val kept = Dedup.keepBest(docs, pairs, "doc_id",
-          TextAnalysis.qualityScore(col("text")))
+      val kept = Dedup.keepBest(docs, pairs, TextAnalysis.qualityScore)
         .select(col("kept_id").as("doc_id"))
       val toks = docs.select(col("doc_id"), col("source"),
         size(TextAnalysis.tokens(col("text"))).as("toks"))
       val plan = operators.Sampling.mixturePlan(
-        toks.join(kept, Seq("doc_id"), "left_semi"),
-        "source", col("toks"), budget = 2000000L, maxEpochs = 4)
+        toks.join(kept, Seq("doc_id"), "left_semi"), budget = 2000000L, maxEpochs = 4)
       val raw = toks.groupBy(col("source"))
         .agg(sum(col("toks").cast("long")).as("tokens_raw"))
       plan.join(raw, Seq("source"))
@@ -1390,8 +1366,7 @@ private[graft] object DedupQueries {
       // keep-best needs a similarity re-check. Pair edges are already
       // the bounded equi-join output; the census adds the oriented
       // wedge join only.
-      val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"),
-          "doc_id", "text", bands = 4,
+      val pairs = Dedup.minhashLshPairs(t(s, dir, "documents"), bands = 4,
           threshold = 0.5, fast = false)
         .select(col("a_id").as("src"), col("b_id").as("dst"))
       operators.Graph.triangleStats(pairs)
@@ -1439,15 +1414,14 @@ private[graft] object DedupQueries {
       // its own bounded equi-join plan; the Venn adds one (a, b)
       // exchange over the unioned pair sets.
       val d = t(s, dir, "documents")
-      val mh = Dedup.minhashLshPairs(d, "doc_id", "text",
+      val mh = Dedup.minhashLshPairs(d,
           bands = 4, threshold = 0.5, fast = false)
         .select(col("a_id").as("a"), col("b_id").as("b"),
           lit(1L).as("bit"))
-      val sh = Dedup.simhashNearDupPairs(d, "doc_id", "text")
+      val sh = Dedup.simhashNearDupPairs(d)
         .select(col("a_id").as("a"), col("b_id").as("b"),
           lit(2L).as("bit"))
-      val fpd = operators.TextAnalysis.winnowingFingerprints(d,
-          "doc_id", "text")
+      val fpd = operators.TextAnalysis.winnowingFingerprints(d)
         .select(col("id"), col("h")).distinct()
       val keep = fpd.groupBy(col("h")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= 100)

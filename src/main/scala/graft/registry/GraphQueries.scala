@@ -188,7 +188,7 @@ private[graft] object GraphQueries {
         .unionAll(edges.select(col("dst").as("node"))).distinct()
       // part graph: the distance table is dimension-scale -> broadcast
       operators.Graph.bfsHops(edges,
-          nodes.filter(col("node") % 101 === 0), maxHops = 3)
+          nodes.filter(col("node") % 101 === 0))
         .orderBy(col("node"))
     }),
       bfsSql(3)),
@@ -473,7 +473,7 @@ private[graft] object GraphQueries {
         li.select(col("l_orderkey").as("ok"),
           col("l_partkey").as("pk")).distinct())
       val n = baskets.groupBy(col("pk")).agg(count(lit(1)).as("cnt"))
-      val pairs = basketPairCounts(baskets, "ok", "pk")
+      val pairs = basketPairCounts(baskets)
         .select(col("pa").as("pk"), col("pb").as("pk2"),
           col("cm").as("co"))
         .filter(col("co") >= 2)
@@ -560,7 +560,7 @@ private[graft] object GraphQueries {
       val edges = operators.Materializer.Local(
         copurchaseEdges(t(s, dir, "lineitem")))
       operators.Graph.betweennessSampled(edges,
-        betweennessPivots(edges, 16), maxDepth = 4)
+        betweennessPivots(edges), maxDepth = 4)
     }),
       betweennessSql(4, 16)),
 
@@ -597,7 +597,7 @@ private[graft] object GraphQueries {
       val both = la.select(col("node"), col("label").as("la"))
         .join(lb2.select(col("node"), col("label").as("lb")),
           Seq("node"))
-      operators.Stats.adjustedRandIndex(both, "la", "lb")
+      operators.Stats.adjustedRandIndex(both)
     }),
       {
       // two full label-prop chains (the q154/q226 replay) on

@@ -330,7 +330,7 @@ private[graft] object MultimodalQueries {
       // exactly. Map-side flatMap; nothing shuffles but the readout.
       import s.implicits._
       val media = Multimodal.mediaFromDocuments(t(s, dir, "documents"))
-      Multimodal.sampleVideoFrames(media, everyK = 2)
+      Multimodal.sampleVideoFrames(media)
         .select(col("doc_id"), col("frame_idx"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"), col("red_mean"))

@@ -735,8 +735,7 @@ private[graft] object RelationalQueries {
       // key range each sorted shard file will span. One partial-combined
       // aggregation; the actual file write is Sharding.writeShards (spec
       // covers the round trip — a manifest row per written directory).
-      operators.Sharding.shardStats(t(s, dir, "documents"), "doc_id",
-          nShards = 16, sizeCol = "n_chars", srcCol = "source")
+      operators.Sharding.shardStats(t(s, dir, "documents"))
         .orderBy(col("shard"))
     }),
       """WITH k AS (
@@ -970,7 +969,7 @@ private[graft] object RelationalQueries {
           (col("ts") + expr("INTERVAL 600 SECONDS")).as("w_end"))
       operators.RangeJoin.intervalJoin(
           ev.select(col("user_id"), col("event_id"), col("ts")),
-          errs, "user_id", "ts", "w_start", "w_end", binSeconds = 1200)
+          errs, binSeconds = 1200)
         .filter(col("event_id") =!= col("err_id"))
         .select(col("user_id"), col("event_id"), col("err_id"),
           abs(unix_micros(col("ts")) - unix_micros(col("err_ts")))
@@ -1023,7 +1022,7 @@ private[graft] object RelationalQueries {
         .withColumn("text",
           when(col("doc_id") % 5 === 0, concat(col("text"), lit(" v2")))
             .otherwise(col("text")))
-      operators.SnapshotDiff.diff(oldSnap, newSnap, "doc_id", "text")
+      operators.SnapshotDiff.diff(oldSnap, newSnap)
         .orderBy(col("doc_id"))
     }),
       """WITH old_snap AS (
@@ -1056,7 +1055,7 @@ private[graft] object RelationalQueries {
         .agg(count(lit(1)).as("n_events"))
       operators.Skew.saltedJoin(
           ev.select(col("user_id"), col("event_id"), col("value")),
-          dim, "user_id")
+          dim)
         .groupBy(col("user_id"), col("n_events"))
         .agg(count(lit(1)).as("n_joined"),
           sum(col("value").cast("decimal(38,6)")).cast("double")
@@ -1171,8 +1170,7 @@ private[graft] object RelationalQueries {
       // sketches alone. The oracle replicates the sketch algebra exactly
       // (same md5, same lexicographic k-min, same merged-k intersection
       // count), so the estimate is hash-checked, not tolerance-gated.
-      operators.Overlap.sliceOverlap(t(s, dir, "documents"), "lang", "text",
-          shingleN = 3, k = 256)
+      operators.Overlap.sliceOverlap(t(s, dir, "documents"), k = 256)
         .orderBy(col("slice_a"), col("slice_b"))
     }),
       """WITH tk AS (
@@ -1266,14 +1264,13 @@ private[graft] object RelationalQueries {
       // single-column sort cannot give.
       val ev = t(s, dir, "events")
         .select((col("user_id") % 256).as("ub"), hour(col("ts")).as("hb"))
-      operators.Layout.zorderShardStats(ev, "ub", "hb",
-          bits = 8, nShards = 16)
+      operators.Layout.zorderShardStats(ev)
         .orderBy(col("shard"))
     }),
       s"""WITH d AS (
         |  SELECT user_id % 256 AS x, hour(ts) AS y FROM events
         |), z AS (
-        |  SELECT x, y, ${operators.Layout.zorderSql("x", "y", 8)} AS z
+        |  SELECT x, y, ${operators.Layout.zorderSql} AS z
         |  FROM d
         |)
         |SELECT z >> 12 AS shard, COUNT(*) AS n_rows,
@@ -1465,7 +1462,7 @@ private[graft] object RelationalQueries {
       operators.TopK.groupTopK(
           t(s, dir, "documents")
             .select(col("source"), col("doc_id"), col("n_chars")),
-          "source", col("n_chars").cast("double"), "doc_id", k = 3)
+          "source", col("n_chars").cast("double"), k = 3)
         .orderBy(col("source"), col("rk"))
     }),
       """SELECT source, doc_id, CAST(n_chars AS DOUBLE) AS score,
@@ -1552,7 +1549,7 @@ private[graft] object RelationalQueries {
       // the oracle is the unpruned join.
       val li = t(s, dir, "lineitem")
       val dim = t(s, dir, "part").filter(col("p_size") === 1)
-      operators.Skew.bloomPrunedJoin(li, dim, "l_partkey", "p_partkey")
+      operators.Skew.bloomPrunedJoin(li, dim)
         .groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("l_extendedprice").cast("decimal(38,6)"))
@@ -1582,8 +1579,7 @@ private[graft] object RelationalQueries {
         col("o_orderdate").cast("timestamp").cast("long").as("ts"),
         col("o_orderkey").as("tie"),
         when(col("o_orderkey") % 97 === 0, "D").otherwise("U").as("op"))
-      operators.SnapshotDiff.applyChangelog(cust, ch, "c_custkey",
-          "ts", "tie", "op", Seq("c_name", "c_acctbal"))
+      operators.SnapshotDiff.applyChangelog(cust, ch, Seq("c_name", "c_acctbal"))
         .orderBy(col("c_custkey"))
     }),
       """WITH ch AS (
@@ -1618,8 +1614,7 @@ private[graft] object RelationalQueries {
       // Training is one vocab-bounded (token, per-class count)
       // aggregate; scoring is a token-keyed join + per-doc decimal ln
       // sums; argmax via an explicit smallest-label-tie CASE chain.
-      operators.NaiveBayes.confusionMatrix(t(s, dir, "documents"),
-        "doc_id", "text", "lang")
+      operators.NaiveBayes.confusionMatrix(t(s, dir, "documents"))
     }),
       // DuckDB re-trains the multinomial NB through the identical count/ln
       // algebra (labels hardcoded to the fixture's langs in ascending order
@@ -1642,8 +1637,7 @@ private[graft] object RelationalQueries {
       // 4-fold cross-validated accuracy of the q192 NB classifier (md5
       // hex-quartile folds): whether the single-split accuracy is split
       // luck. Four one-aggregate trainings; output is fold-sized.
-      operators.NaiveBayes.crossValAccuracy(t(s, dir, "documents"),
-        "doc_id", "text", "lang")
+      operators.NaiveBayes.crossValAccuracy(t(s, dir, "documents"))
     }),
       {
       val bounds = Seq(("0", "3"), ("4", "7"), ("8", "b"), ("c", "f"))
@@ -1678,8 +1672,7 @@ private[graft] object RelationalQueries {
         .select(col("user_id"), col("event_id").as("pid"),
           (col("ts") - expr("INTERVAL 1 HOUR")).as("w_start"),
           col("ts").as("w_end"))
-      val pairs = operators.RangeJoin.intervalJoin(touches, purchases,
-          "user_id", "ts", "w_start", "w_end", binSeconds = 3600L)
+      val pairs = operators.RangeJoin.intervalJoin(touches, purchases, binSeconds = 3600L)
         .select(col("event_type"), col("pid"),
           round(lit(1800.0) / (lit(1800.0)
             + (unix_timestamp(col("w_end")) - unix_timestamp(col("ts")))
@@ -1727,8 +1720,7 @@ private[graft] object RelationalQueries {
       // row/key mass + load ratio vs uniform — the "how bad is the worst
       // task" scout (q119 salts what this flags). One key-keyed
       // partial-combined count; assignment rides the bounded key table.
-      operators.Skew.partitionSkewAudit(t(s, dir, "events"), "user_id",
-        nParts = 8)),
+      operators.Skew.partitionSkewAudit(t(s, dir, "events"), nParts = 8)),
       """WITH kc AS (
         |  SELECT CAST(user_id AS VARCHAR) AS k, COUNT(*) AS n
         |  FROM events GROUP BY 1
@@ -1829,8 +1821,7 @@ private[graft] object RelationalQueries {
       // (~1/9) — the minimal-disruption argument, measured on this
       // corpus's real keys. Both assignments are map-side md5
       // projections; one aggregate; 2-row output.
-      operators.Sharding.reshardAudit(t(s, dir, "documents"), "doc_id",
-          n0 = 8, n1 = 9)
+      operators.Sharding.reshardAudit(t(s, dir, "documents"))
         .orderBy(col("scheme"))),
       """WITH k AS (
         |  SELECT DISTINCT CAST(doc_id AS VARCHAR) AS k FROM documents
@@ -3220,12 +3211,15 @@ private[graft] object RelationalQueries {
       // experimenter sizes the test BEFORE burning two weeks of
       // traffic. One decimal sufficient-sums aggregate, scalar algebra
       // after (z constants shared verbatim with the oracle).
-      def d(c: Column) = c.cast("decimal(19,6)")
+      def d = {
+        val c = col("value")
+        c.cast("decimal(19,6)")
+      }
       val za = 1.959963984540054; val zb = 0.8416212335729143
       val agg = t(s, dir, "events").groupBy(col("event_type")).agg(
         count(lit(1)).as("n"),
-        sum(d(col("value"))).as("sv"),
-        sum(d(col("value")) * d(col("value"))).as("svv"))
+        sum(d).as("sv"),
+        sum(d * d).as("svv"))
       val nD = col("n").cast("double")
       val mean = col("sv").cast("double") / nD
       val varS = (nD * col("svv").cast("double")
@@ -4641,7 +4635,7 @@ private[graft] object RelationalQueries {
         explode(operators.TextAnalysis.tokens(col("text"))).as("tok"))
       val shardCounts =
         toks.groupBy(col("shard"), col("tok")).agg(count(lit(1)).as("c"))
-      operators.Stats.heavyHitterBracket(shardCounts, kTop = 32)
+      operators.Stats.heavyHitterBracket(shardCounts)
     }),
       // per-shard top-k-with-threshold summaries merged; the q305 oracle's
       // md5 shard replay, then the bracket per exact global top-10 token

@@ -15,7 +15,7 @@ private[graft] object SimilarityQueries {
   val specs: Seq[QuerySpec] = Seq(
 
     QuerySpec("q57_vec_quantize", ((s, dir) => {
-      val q = Similarity.quantizeInt8(col("embedding"))
+      val q = Similarity.quantizeInt8
       t(s, dir, "embeddings").select(col("vec_id"),
         array_join(q.getField("codes"), ",").as("codes"),
         q.getField("scale").as("scale"))
@@ -77,7 +77,7 @@ private[graft] object SimilarityQueries {
       // LSH-bucketed ANN with exact re-rank — oracle-checkable (portable
       // md5-derived hyperplanes + decimal-exact cosine)
       val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30), k = 5)
+      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30))
         .orderBy(col("query_id"), col("rk"))
     }),
       s"""WITH ${bucketCtes(8)},
@@ -111,8 +111,7 @@ private[graft] object SimilarityQueries {
       // planes buckets at Hamming distance 1 — the recall knob,
       // correctness-pinned against the oracle's probe expansion
       val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30), k = 5,
-          probeBits = 1)
+      Similarity.lshTopK(emb, emb.filter(col("vec_id") < 30), probeBits = 1)
         .orderBy(col("query_id"), col("rk"))
     }),
       s"""WITH ${bucketCtes(8)},
@@ -184,11 +183,10 @@ private[graft] object SimilarityQueries {
       // chunk. Model-free baseline wired through the same interface a
       // real embedding column would use; queries = the chunks of docs
       // 0-2 against the whole chunk corpus.
-      val chunks = TextAnalysis.chunkDocuments(t(s, dir, "documents"),
-          "doc_id", "text", chunkLen = 64, stride = 48)
+      val chunks = TextAnalysis.chunkDocuments(t(s, dir, "documents"), chunkLen = 64, stride = 48)
         .select((col("doc_id") * 1000 + col("chunk_id")).cast("long")
           .as("vec_id"), TextAnalysis.tokens(col("chunk_text")).as("toks"))
-      val vecs = Similarity.hashEmbeddings(chunks, "vec_id", "toks",
+      val vecs = Similarity.hashEmbeddings(chunks,
         dim = 32).withColumnRenamed("id", "vec_id")
       Similarity.bruteForceTopK(vecs, vecs.filter(col("vec_id") < 3000),
           k = 3, exact = true)
@@ -312,7 +310,7 @@ private[graft] object SimilarityQueries {
       // IVF cell-probe ANN; seeds = first 8 vectors — oracle-checkable
       val emb = t(s, dir, "embeddings")
       Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 30),
-          emb.filter(col("vec_id") < 8), k = 5)
+          emb.filter(col("vec_id") < 8))
         .orderBy(col("query_id"), col("rk"))
     }),
       s"""WITH seeds AS (
@@ -361,7 +359,7 @@ private[graft] object SimilarityQueries {
       // element stream (the corpus shuffles once for the stats, never for
       // the transform). Moments in DECIMAL(38,20), z-scores in one fixed
       // IEEE op order -> oracle-exact.
-      Similarity.whiten(t(s, dir, "embeddings"), "vec_id", "embedding")
+      Similarity.whiten(t(s, dir, "embeddings"))
         .orderBy(col("vec_id"), col("pos"))
     }),
       """WITH el AS (
@@ -438,7 +436,7 @@ private[graft] object SimilarityQueries {
       // 10-term query over 100 TB shuffles 10 terms' postings, not the
       // corpus. df is a ≤|query|-row broadcast; N/avgdl ride a 1-row
       // broadcast cross join; the top-N is a bounded TakeOrdered.
-      operators.Retrieval.bm25(t(s, dir, "documents"), "doc_id", "text",
+      operators.Retrieval.bm25(t(s, dir, "documents"),
           Seq("spark", "join", "window"), topN = 20)
         .orderBy(col("rk"))
     }),
@@ -453,8 +451,7 @@ private[graft] object SimilarityQueries {
       // would sample. The df cap drops the Zipf head from the
       // similarity space BEFORE the pair join — the lever that bounds
       // per-term fanout at 100 TB.
-      operators.Retrieval.sparseCosinePairs(t(s, dir, "documents"),
-          "doc_id", "text", maxDf = 1000L, threshold = 0.3, shingleN = 4)
+      operators.Retrieval.sparseCosinePairs(t(s, dir, "documents"), maxDf = 1000L, threshold = 0.3, shingleN = 4)
         .orderBy(col("a_id"), col("b_id"))
     }),
       """WITH raws AS (
@@ -504,7 +501,7 @@ private[graft] object SimilarityQueries {
       // the retrievers.
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
-      val lex = operators.Retrieval.bm25(docs, "doc_id", "text",
+      val lex = operators.Retrieval.bm25(docs,
           Seq("merge", "sort", "hash"), topN = 30)
         .select(col("doc_id"), col("rk"))
       val dense = Similarity.bruteForceTopK(emb,
@@ -570,8 +567,7 @@ private[graft] object SimilarityQueries {
       // per-dim centroid aggregate broadcast back, map-side DECIMAL
       // distances, one tiny percentile fence — the corpus never joins
       // itself.
-      Similarity.centroidOutliers(t(s, dir, "embeddings"),
-          "vec_id", "embedding", pct = 0.99)
+      Similarity.centroidOutliers(t(s, dir, "embeddings"), pct = 0.99)
         .orderBy(col("vec_id"))
     }),
       """WITH el AS (
@@ -687,8 +683,7 @@ private[graft] object SimilarityQueries {
       // maxDf drops corpus-frequent shingles BEFORE the pair join; the
       // ratio is an exact integer quotient, so nothing float-sensitive
       // crosses engines.
-      operators.Retrieval.containmentPairs(t(s, dir, "documents"),
-          "doc_id", "text", shingleN = 3, maxDf = 50, threshold = 0.8)
+      operators.Retrieval.containmentPairs(t(s, dir, "documents"), maxDf = 50, threshold = 0.8)
         .orderBy(col("a_id"), col("b_id"))
     }),
       """WITH tk AS (
@@ -732,8 +727,7 @@ private[graft] object SimilarityQueries {
       // are one tiny per-(label,dim) aggregate assembled into a single
       // broadcast row; every distance computes map-side against it; the
       // corpus never shuffles.
-      Similarity.simplifiedSilhouette(t(s, dir, "embeddings"),
-          "vec_id", "embedding", "label")
+      Similarity.simplifiedSilhouette(t(s, dir, "embeddings"))
         .orderBy(col("label"))
     }),
       """WITH el AS (
@@ -772,8 +766,7 @@ private[graft] object SimilarityQueries {
       // between/within scatter scalar — "do these cluster labels
       // actually separate" (the global complement of q151's per-point
       // silhouette). One (label, dim) exchange of exact DECIMAL sums.
-      operators.Similarity.fisherSeparation(t(s, dir, "embeddings"),
-        "label", "embedding")
+      operators.Similarity.fisherSeparation(t(s, dir, "embeddings"))
     }),
       """WITH cell AS MATERIALIZED (
         |  SELECT label, u.pos,
@@ -827,8 +820,7 @@ private[graft] object SimilarityQueries {
       // exact arithmetic, and the eigenvector lands as a d-row table to
       // project against map-side. Fixed 5 iterations, sign pinned by
       // the max-|component| normalization.
-      Similarity.pcaTopComponent(t(s, dir, "embeddings"), "vec_id",
-        "embedding")
+      Similarity.pcaTopComponent(t(s, dir, "embeddings"))
     }),
       // DuckDB replays the full power iteration: decimal-exact moment
       // cells, covariance round(12), per-round matrix-vector products as
@@ -880,18 +872,19 @@ private[graft] object SimilarityQueries {
       // squared euclidean, round(6), ties to lowest id) from everything
       // already kept. k bounded TakeOrdered passes; centers ride as
       // plan literals.
-      Similarity.kCenterCoreset(t(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 5)
+      Similarity.kCenterCoreset(t(s, dir, "embeddings"), k = 5)
     }),
       // unrolled Gonzalez rounds: each center is the argmax of the running
       // least squared distance (decimal-exact terms, round(6), ties to the
       // lowest id) — identical algebra to the Spark literal-center passes.
       {
-      def dist(a: String, b: String) =
+      def dist(a: String) = {
+        val b = "c.embedding"
         s"""round(CAST(list_sum(list_transform(list_zip($a, $b),
            |    z -> CAST((CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
            |      * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
            |      AS DECIMAL(38,20)))) AS DOUBLE), 6)""".stripMargin
+      }
       val k = 5
       val sb = new StringBuilder
       sb ++= s"""WITH e AS MATERIALIZED (
@@ -899,7 +892,7 @@ private[graft] object SimilarityQueries {
          |), c0 AS (SELECT vec_id, embedding FROM e ORDER BY vec_id LIMIT 1
          |), m1 AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding,
-         |    ${dist("e.embedding", "c.embedding")} AS md
+         |    ${dist("e.embedding")} AS md
          |  FROM e, c0 c
          |)""".stripMargin
       for (r <- 1 until k) {
@@ -910,7 +903,7 @@ private[graft] object SimilarityQueries {
           sb ++= s"""
          |, m${r + 1} AS MATERIALIZED (
          |  SELECT m.vec_id, m.embedding,
-         |    least(m.md, ${dist("m.embedding", "c.embedding")}) AS md
+         |    least(m.md, ${dist("m.embedding")}) AS md
          |  FROM m$r m, c$r c
          |)""".stripMargin
       }
@@ -932,10 +925,8 @@ private[graft] object SimilarityQueries {
       // the expanded query reruns BM25 — the classic recall lever of a
       // lexical stack. Both passes ride q138's broadcast-trim shape.
       val docs = t(s, dir, "documents")
-      val expanded = operators.Retrieval.rm3ExpandTerms(docs, "doc_id",
-        "text", Seq("spark", "join"), fbDocs = 5, fbTerms = 3)
-      operators.Retrieval.bm25(docs, "doc_id", "text", expanded,
-          topN = 20)
+      val expanded = operators.Retrieval.rm3ExpandTerms(docs, Seq("spark", "join"), fbDocs = 5, fbTerms = 3)
+      operators.Retrieval.bm25(docs, expanded, topN = 20)
         .orderBy(col("rk"))
     }),
       // two nested BM25 chains (the inner WITHs shadow; the expanded term
@@ -976,8 +967,7 @@ private[graft] object SimilarityQueries {
       // slice are map-side array ops over the 10 result docs only.
       val docs = t(s, dir, "documents")
       val terms = Seq("spark", "join", "window")
-      val run = operators.Retrieval.bm25(docs, "doc_id", "text", terms,
-        topN = 10)
+      val run = operators.Retrieval.bm25(docs, terms, topN = 10)
       val pos = least(terms.map(tm =>
         nullif(array_position(col("tk"), lit(tm)), lit(0L))): _*)
       val snips = docs
@@ -1030,7 +1020,7 @@ private[graft] object SimilarityQueries {
         element_at(col("embedding"), 1).as("x"),
         element_at(col("embedding"), 2).as("y"))
       val asg = operators.Similarity.gridDensityClusters(
-        emb, "vec_id", "x", "y", eps = 0.03, minPts = 6L)
+        emb, eps = 0.03, minPts = 6L)
       asg.groupBy(coalesce(col("ck"), lit(-1L)).as("g"))
         .agg(min(col("pid")).as("rep"),
           countDistinct(col("cx"), col("cy")).as("n_cells"),
@@ -1147,7 +1137,7 @@ private[graft] object SimilarityQueries {
       // q199/q204 precedent), BigDecimal HALF_UP mirroring Column.round.
       val docs = t(s, dir, "documents")
       val cand = operators.Materializer.Local(
-        operators.Retrieval.bm25(docs, "doc_id", "text",
+        operators.Retrieval.bm25(docs,
           Seq("spark", "join", "window"), topN = 20))
       val sh = operators.Materializer.Local(
         docs.join(broadcast(cand.select(col("doc_id"))), Seq("doc_id"))
@@ -1357,8 +1347,7 @@ private[graft] object SimilarityQueries {
       // plan is exactly BM25's: broadcast-trimmed postings, one
       // bounded (doc,term) exchange, TakeOrdered — the |q|·N cross
       // product never materializes.
-      operators.Retrieval.queryLikelihood(t(s, dir, "documents"),
-          "doc_id", "text", Seq("spark", "join", "window"),
+      operators.Retrieval.queryLikelihood(t(s, dir, "documents"), Seq("spark", "join", "window"),
           mu = 100.0, topN = 20)
         .orderBy(col("rk"))
     }),
@@ -1387,8 +1376,7 @@ private[graft] object SimilarityQueries {
       // twice), bit-identical per label to the single-query operators
       // (q138's and q282's oracles pin those; RBO's oracle replays per
       // label)
-      val shared = operators.Retrieval.trimmedPostings(docs, "doc_id",
-        "text", sets.flatMap(_._2).distinct)
+      val shared = operators.Retrieval.trimmedPostings(docs, sets.flatMap(_._2).distinct)
       val a = operators.Retrieval.bm25Batch(shared, sets)
         .select(col("q"), col("doc_id"), col("rk").as("ra"))
       val b = operators.Retrieval.queryLikelihoodBatch(shared, sets,

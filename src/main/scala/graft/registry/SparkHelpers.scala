@@ -134,7 +134,7 @@ private[graft] object SparkHelpers {
   def logRegWeightsFor(s: SparkSession, dir: String,
                                docs: DataFrame,
                                label: org.apache.spark.sql.Column,
-                               iters: Int, eta: Double): Array[Double] = {
+                               iters: Int): Array[Double] = {
     val f = new java.io.File(
       s".bench/q91_w_${corpusKey(dir)}_$iters").getAbsoluteFile
     val nRows = docs.count()
@@ -145,8 +145,8 @@ private[graft] object SparkHelpers {
       lines(1).split(",").map(_.toDouble)
     }.toOption
     cached.getOrElse {
-      val w = operators.QualityClassifier.trainLogReg(docs, "text",
-        label, iters = iters, eta = eta)
+      val w = operators.QualityClassifier.trainLogReg(docs, label,
+        iters = iters)
       f.getParentFile.mkdirs()
       java.nio.file.Files.write(f.toPath,
         (nRows.toString + "\n" + w.map(_.toString).mkString(","))
@@ -228,18 +228,17 @@ private[graft] object SparkHelpers {
             >= length(col("text")) * 6).otherwise(false) &&
         size(tk) >= 30).as("f_gates"),
       size(tk).cast("long").as("ntk"),
-      (operators.TextAnalysis.langId(col("text")) === "en")
+      (operators.TextAnalysis.langId === "en")
         .as("f_lang"),
-      (round(operators.TextAnalysis.qualityScore(col("text")), 6)
+      (round(operators.TextAnalysis.qualityScore, 6)
         >= 0.3).as("f_qual"),
       md5(col("text")).as("k"))
     val wk = d.groupBy(md5(col("text")).as("k"))
       .agg(min(col("doc_id")).as("keep"))
-    val nd = Dedup.minhashLshPairs(d, "doc_id", "text",
-        bands = 4, threshold = 0.5, fast = false)
+    val nd = Dedup.minhashLshPairs(d, bands = 4, threshold = 0.5, fast = false)
       .select(col("b_id")).distinct()
     val ov = TextAnalysis.contaminationOverlap(d,
-        d.filter(col("doc_id") < 10), "doc_id", "text", n = 5)
+        d.filter(col("doc_id") < 10))
       .select(col("id").as("doc_id"), col("n_overlap"))
     val cum = flags0.join(wk, Seq("k"))
       .join(nd, col("doc_id") === col("b_id"), "left")
@@ -343,12 +342,14 @@ private[graft] object SparkHelpers {
     * appears exactly once in both shapes; exceptAll both ways == 0). */
   def copurchasePairCounts(li: DataFrame): DataFrame =
     basketPairCounts(li.select(col("l_orderkey").as("ok"),
-      col("l_partkey").as("pk")), "ok", "pk")
+      col("l_partkey").as("pk")))
 
   /** Generalized in-basket pair supports — see [[operators.Baskets]]. */
-  def basketPairCounts(bi: DataFrame, bkCol: String,
-                                      itCol: String): DataFrame =
+  def basketPairCounts(bi: DataFrame): DataFrame = {
+    val bkCol = "ok"
+    val itCol = "pk"
     operators.Baskets.basketPairCounts(bi, bkCol, itCol)
+  }
 
   /** The support>=2 co-purchase part graph (src < dst). */
   def copurchaseEdges(li: DataFrame): DataFrame =
@@ -364,11 +365,13 @@ private[graft] object SparkHelpers {
     * identical set. The K-row result is bounded-by-construction
     * (GlobalLimit), so the seed-side joins inside the BFS stay guard-
     * clean. */
-  def betweennessPivots(edges: DataFrame, k: Int): DataFrame =
+  def betweennessPivots(edges: DataFrame): DataFrame = {
+    val k = 16
     edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node"))).distinct()
       .orderBy(md5(col("node").cast("string")), col("node"))
       .limit(k)
+  }
 
   /** Truncated rank-biased-overlap contribution table (Webber et al.
     * 2010), p = 0.9, depth 10: c(m) = (1-p)·Σ_{d=m..10} p^(d-1)/d is

@@ -21,7 +21,7 @@ private[graft] object StatsQueries {
       // resampling (Xie et al. 2023; no rand(), engine-portable)
       val docs = t(s, dir, "documents")
       operators.Sampling.dsirResample(docs,
-          docs.filter(col("source") === "src0"), "doc_id", "text",
+          docs.filter(col("source") === "src0"),
           n = 100)
         .select(col("rk"), col("id").as("doc_id"), col("logw"), col("score"))
         .orderBy(col("rk"))
@@ -74,7 +74,7 @@ private[graft] object StatsQueries {
       // per group ever reach the rank window — the naive per-group window
       // is the skew cliff at 100 TB (one language can be half the corpus)
       graft.operators.Sampling.stratifiedSample(
-          t(s, dir, "documents"), "lang", "doc_id", n = 20)
+          t(s, dir, "documents"), n = 20)
         .select(col("lang"), col("doc_id"), col("rk"))
         .orderBy(col("lang"), col("rk"))
     }),
@@ -92,8 +92,7 @@ private[graft] object StatsQueries {
       // aggregation — never a corpus-wide per-domain window (one domain
       // can be half of 100 TB; the heap exchange is ≤50 rows per
       // partition-group regardless).
-      operators.Sampling.cappedByScore(t(s, dir, "documents"), "source",
-          "doc_id", TextAnalysis.qualityScore(col("text")), n = 50)
+      operators.Sampling.cappedByScore(t(s, dir, "documents"), TextAnalysis.qualityScore, n = 50)
         .select(col("source"), col("doc_id"), col("score"), col("rk"))
         .orderBy(col("source"), col("rk"))
     }),
@@ -132,7 +131,7 @@ private[graft] object StatsQueries {
         "blocklist" -> !col("source").isin("src17", "src18", "src19"),
         "lang_en" -> (col("lang") === "en"),
         "min_len" -> (col("n_chars") >= 200),
-        "quality" -> (TextAnalysis.qualityScore(col("text")) >= 0.3)))
+        "quality" -> (TextAnalysis.qualityScore >= 0.3)))
         .orderBy(col("stage_id"))
     }),
       s"""WITH stats AS (
@@ -179,7 +178,7 @@ private[graft] object StatsQueries {
       // the bounded TopKAgg heap, so a language holding half the corpus
       // still can't funnel one task. Complements q74 (uniform exact-n)
       // and q88 (global importance resample).
-      Sampling.weightedSample(t(s, dir, "documents"), "lang", "doc_id",
+      Sampling.weightedSample(t(s, dir, "documents"),
           col("n_chars").cast("double"), n = 25)
         .orderBy(col("lang"), col("rk"))
     }),
@@ -216,7 +215,7 @@ private[graft] object StatsQueries {
         .withColumn("arm",
           when(substring(md5(col("user_id").cast("string")), 1, 1) < "8",
             lit("A")).otherwise(lit("B")))
-      operators.Stats.abZTest(units, "arm", "converted")
+      operators.Stats.abZTest(units)
     }),
       """WITH units AS (
         |  SELECT user_id,
@@ -321,7 +320,7 @@ private[graft] object StatsQueries {
       // distribution card that turns q148's min/max profile into
       // something a skew/pricing analysis can read.
       operators.Stats.equiDepthHistogram(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount"), buckets = 10)
+        Seq("l_quantity", "l_extendedprice", "l_discount"))
     }),
       """WITH a AS (
         |  SELECT
@@ -354,7 +353,7 @@ private[graft] object StatsQueries {
       val cutoff = lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00"))
       operators.Stats.psiDrift(
         ev.filter(col("ts") < cutoff),
-        ev.filter(col("ts") >= cutoff), "value")
+        ev.filter(col("ts") >= cutoff))
     }),
       """WITH ref AS (
         |  SELECT value FROM events
@@ -416,8 +415,7 @@ private[graft] object StatsQueries {
       val emb = t(s, dir, "embeddings")
       operators.Stats.aucRankSum(
         emb.select(element_at(col("embedding"), 1).as("score"),
-          (col("label") % 2 === 0).as("pos")),
-        "score", "pos")
+          (col("label") % 2 === 0).as("pos")))
     }),
       """WITH b AS (
         |  SELECT round(CAST(embedding[1] AS DOUBLE), 6) AS s,
@@ -442,8 +440,7 @@ private[graft] object StatsQueries {
       // pairwise association rules over order baskets: support /
       // directional confidence / lift, minCount >= 3, top 100 by lift.
       // Pair fanout is basket-size-bounded; item counts broadcast.
-      operators.Stats.associationLift(t(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey", minCount = 3, topN = 100)
+      operators.Stats.associationLift(t(s, dir, "lineitem"), minCount = 3, topN = 100)
     }),
       """WITH bi AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
@@ -477,8 +474,7 @@ private[graft] object StatsQueries {
       // RFM lifecycle segmentation: per-customer recency / frequency /
       // monetary scored 1-5 against exact population quintile fences
       // (broadcast, assigned map-side), rolled up to segment cells.
-      operators.Stats.rfmSegments(t(s, dir, "orders"), "o_custkey",
-        "o_orderdate", "o_totalprice")
+      operators.Stats.rfmSegments(t(s, dir, "orders"))
     }),
       """WITH per AS MATERIALIZED (
         |  SELECT o_custkey AS cust, max(o_orderdate) AS last_d,
@@ -542,8 +538,7 @@ private[graft] object StatsQueries {
       // inequality monitor ("is half the corpus one source's boiler-
       // plate?"). Exact integer trapezoid over the bounded length
       // histogram.
-      operators.Stats.giniConcentration(t(s, dir, "documents"),
-        "n_chars")
+      operators.Stats.giniConcentration(t(s, dir, "documents"))
     }),
       """WITH hist AS (
         |  SELECT CAST(n_chars AS BIGINT) AS v, count(*) AS c
@@ -567,7 +562,7 @@ private[graft] object StatsQueries {
       // digit shares vs log10(1 + 1/d) with the chi-square statistic —
       // the fabricated-data smoke test. Digit extraction rides the
       // scan via the DECIMAL string rendering (no log10 boundary ulp).
-      operators.Stats.benfordAudit(t(s, dir, "orders"), "o_totalprice")
+      operators.Stats.benfordAudit(t(s, dir, "orders"))
     }),
       """WITH obs AS (
         |  SELECT CAST(substr(CAST(CAST(o_totalprice AS DECIMAL(18,2))
@@ -602,7 +597,7 @@ private[graft] object StatsQueries {
       // (100·cumw >= p·W), no interpolation; the histogram bounds
       // every post-shuffle step.
       operators.Stats.weightedQuantiles(t(s, dir, "documents"),
-          "source", "n_chars", "n_chars", Seq(25, 50, 75))
+          "n_chars", "n_chars", Seq(25, 50, 75))
         .orderBy(col("key"), col("pct"))
     }),
       """WITH hist AS MATERIALIZED (
@@ -631,8 +626,7 @@ private[graft] object StatsQueries {
       val ev = t(s, dir, "events")
       operators.Stats.contingencyStats(
         ev.select(col("event_type").as("a"),
-          hour(col("ts")).cast("int").as("b")),
-        "a", "b")
+          hour(col("ts")).cast("int").as("b")))
     }),
       """WITH ct AS MATERIALIZED (
         |  SELECT event_type AS a, CAST(CAST(hour(ts) AS INT) AS VARCHAR)
@@ -677,7 +671,7 @@ private[graft] object StatsQueries {
       // percentile-rank (midrank) normalization of doc length over the
       // bounded value histogram — the scale-free transform for blending
       // heterogeneous quality signals; the corpus never sorts globally.
-      operators.Stats.percentileRanks(t(s, dir, "documents"), "n_chars")
+      operators.Stats.percentileRanks(t(s, dir, "documents"))
         .orderBy(col("v"))
     }),
       """WITH hist AS (
@@ -781,8 +775,7 @@ private[graft] object StatsQueries {
       // noise draw is the deterministic salted-md5 inverse-CDF (q143's
       // uniform idiom) so retries, replays and the oracle draw the
       // identical noise; only the noisy column is released.
-      operators.Stats.dpNoisyCounts(t(s, dir, "events"), "event_type",
-        epsilon = 1.0)
+      operators.Stats.dpNoisyCounts(t(s, dir, "events"))
     }),
       """WITH cnt AS (
         |  SELECT event_type AS grp, CAST(count(*) AS BIGINT) AS n
@@ -811,7 +804,7 @@ private[graft] object StatsQueries {
           .select(col("event_type"), hour(col("ts")).as("hb"),
             floor(col("value") / 10.0).cast("long").as("vb"),
             col("user_id")),
-        Seq("event_type", "hb", "vb"), "user_id", l = 3)
+        Seq("event_type", "hb", "vb"))
     }),
       """WITH tup AS (
         |  SELECT event_type,
@@ -836,8 +829,7 @@ private[graft] object StatsQueries {
       // verified exactly on the basket join restricted to candidates.
       operators.Stats.frequentTriples(
         t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey")),
-        "l_orderkey", "l_partkey", minCount = 2, topN = 50)
+          .select(col("l_orderkey"), col("l_partkey")), topN = 50)
     }),
       """WITH bi AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
@@ -878,8 +870,8 @@ private[graft] object StatsQueries {
         .orderBy(col("edge"))
     }),
       {
-      def edge(lt: String, lk: String, rt: String, rk: String,
-               label: String) =
+      def edge(lk: String, rt: String, rk: String, label: String) = {
+        val lt = "lineitem"
         s"""SELECT '$label' AS edge,
            |  (SELECT CAST(count(*) AS BIGINT) FROM $lt) AS n_l,
            |  (SELECT CAST(count(DISTINCT $lk) AS BIGINT) FROM $lt) AS d_l,
@@ -896,11 +888,12 @@ private[graft] object StatsQueries {
            |    JOIN
            |    (SELECT $rk AS k, count(*) AS cr FROM $rt GROUP BY 1) r
            |    ON l.k = r.k) AS n_join""".stripMargin
+      }
       s"""WITH base AS (
-         |${edge("lineitem", "l_orderkey", "orders", "o_orderkey",
+         |${edge("l_orderkey", "orders", "o_orderkey",
                 "lineitem->orders")}
          |UNION ALL
-         |${edge("lineitem", "l_partkey", "part", "p_partkey",
+         |${edge("l_partkey", "part", "p_partkey",
                 "lineitem->part")}
          |)
          |SELECT edge, n_l, d_l, n_r, d_r, est, n_join,
@@ -923,18 +916,20 @@ private[graft] object StatsQueries {
       val toks = t(s, dir, "documents")
         .select((col("doc_id") % 2).as("batch"),
           explode(operators.TextAnalysis.tokens(col("text"))).as("token"))
-      operators.Stats.cmsHeavyHitters(toks, "token", "batch",
+      operators.Stats.cmsHeavyHitters(toks,
         depth = 3, width = 32, minShare = 0.002)
     }),
       {
       // CMS bucket of token under depth hash i: first 8 md5 hex digits
       // of "i|token" as an integer, % width — mirrors Stats.cmsHeavyHitters
-      def bkt(tok: String) =
+      def bkt = {
+        val tok = "token"
         s"""list_sum([CAST(round(pow(16, 7 - j)) AS BIGINT) *
            |      (strpos('0123456789abcdef',
            |        substr(md5(CAST(i AS VARCHAR) || '|' || $tok),
            |          j + 1, 1)) - 1)
            |      for j in range(0, 8)]) % 32""".stripMargin
+      }
       s"""WITH tk AS (
          |  SELECT doc_id % 2 AS batch,
          |    unnest(list_filter(regexp_split_to_array(text, '\\s+'),
@@ -944,7 +939,7 @@ private[graft] object StatsQueries {
          |  SELECT batch, token, COUNT(*) AS c FROM tk GROUP BY 1, 2
          |), cells AS (
          |  SELECT batch, i AS depth,
-         |    ${bkt("token")} AS bucket, c
+         |    ${bkt} AS bucket, c
          |  FROM tc CROSS JOIN range(0, 3) t(i)
          |), sk AS MATERIALIZED (
          |  SELECT depth, bucket, CAST(SUM(c) AS BIGINT) AS cell
@@ -955,7 +950,7 @@ private[graft] object StatsQueries {
          |  FROM tc GROUP BY 1
          |), cd AS (
          |  SELECT token, exact_cnt, i AS depth,
-         |    ${bkt("token")} AS bucket
+         |    ${bkt} AS bucket
          |  FROM cand CROSS JOIN range(0, 3) t(i)
          |), est AS (
          |  SELECT cd.token, MAX(cd.exact_cnt) AS exact_cnt,
@@ -1022,7 +1017,7 @@ private[graft] object StatsQueries {
         floor(col("value") * lit(100)).cast("long").as("sv"), col("ts"))
       operators.Stats.ksDrift(
         scaled.filter(col("ts") < cutoff).select(col("sv")),
-        scaled.filter(col("ts") >= cutoff).select(col("sv")), "sv")
+        scaled.filter(col("ts") >= cutoff).select(col("sv")))
     }),
       """WITH e AS (
         |  SELECT CAST(floor(value * 100) AS BIGINT) AS v,
@@ -1060,8 +1055,7 @@ private[graft] object StatsQueries {
         operators.TextAnalysis.tokenCount(col("text")).cast("long")
           .as("toks"),
         col("n_chars"))
-      operators.Stats.olsResidualOutliers(d, "source", "toks", "n_chars",
-          keepCols = Seq("doc_id"), kSigma = 2.0)
+      operators.Stats.olsResidualOutliers(d, keepCols = Seq("doc_id"))
         .orderBy(col("doc_id"))
     }),
       s"""WITH d AS (
@@ -1122,8 +1116,7 @@ private[graft] object StatsQueries {
         scaled.filter(col("ts") < cutoff)
           .select(col("event_type"), col("sv")),
         scaled.filter(col("ts") >= cutoff)
-          .select(col("event_type"), col("sv")),
-        "event_type", "sv")
+          .select(col("event_type"), col("sv")))
     }),
       """WITH e AS (
         |  SELECT event_type AS g, CAST(floor(value * 100) AS BIGINT) AS v,
@@ -1228,8 +1221,7 @@ private[graft] object StatsQueries {
       // not ingest formatting. Two histogram exchanges + one bounded
       // window walk on exact-integer quantile keys — the corpus never
       // sorts globally and no float rank exists anywhere.
-      operators.Stats.quantileNormalize(t(s, dir, "documents"),
-        "source", "n_chars")),
+      operators.Stats.quantileNormalize(t(s, dir, "documents"))),
       // identical merged-CDF walk: exact-integer quantile keys, pooled
       // rows first on ties, carry-min of pooled values
       """WITH h AS (
@@ -1275,8 +1267,7 @@ private[graft] object StatsQueries {
       // the global prior). One dimension-scale aggregate broadcasts
       // back; the encode is map-side; exact-integer cross products until
       // one pinned division.
-      operators.Stats.targetEncodeLoo(t(s, dir, "documents"),
-          "source", "n_chars", m = 10L, keepCols = Seq("doc_id"))
+      operators.Stats.targetEncodeLoo(t(s, dir, "documents"), m = 10L)
         .select(col("doc_id"), col("source"), col("y"), col("loo_enc"))
         .orderBy(col("doc_id"))),
       """WITH g AS (
@@ -1387,7 +1378,7 @@ private[graft] object StatsQueries {
         .withColumn("arm",
           when(substring(md5(col("user_id").cast("string")), 1, 1) < "8",
             lit("A")).otherwise(lit("B")))
-      operators.Stats.cuped(units, "arm", "x", "y")
+      operators.Stats.cuped(units)
     }),
       """WITH b AS (
         |  SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS mid
@@ -1463,8 +1454,7 @@ private[graft] object StatsQueries {
         .groupBy(col("user_id"))
         .agg(sum(col("value").cast("decimal(19,6)")).as("rev"),
           count(lit(1)).as("cnt"))
-      operators.Stats.jackknifeRatio(units, "user_id", "rev", "cnt",
-        b = 32)
+      operators.Stats.jackknifeRatio(units, b = 32)
     }),
       """WITH units AS (
         |  SELECT user_id, sum(CAST(value AS DECIMAL(19,6))) AS rev,
@@ -1526,7 +1516,7 @@ private[graft] object StatsQueries {
           (col("lang") === "en").cast("long").as("y"))
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"))
-      operators.Stats.isotonicCalibration(bins, "bin", "n", "pos")
+      operators.Stats.isotonicCalibration(bins)
     }),
       """WITH bins AS (
         |  SELECT CAST(least(n_chars // 50, 19) AS BIGINT) AS b,
@@ -1579,8 +1569,7 @@ private[graft] object StatsQueries {
           col("close_price"))
         .agg(count(lit(1)).as("n"))
       operators.Stats.fellegiSunterEm(pat,
-        Seq("same_priority", "same_status", "close_price"), "n",
-        rounds = 5)
+        Seq("same_priority", "same_status", "close_price"))
     }),
       {
       val bits = 0 until 3
@@ -1669,8 +1658,7 @@ private[graft] object StatsQueries {
         .select(round((col("u") - mu) / sdu, 6).as("x1"),
           round((col("v") - mv) / sdv, 6).as("x2"),
           col("y"), col("n"))
-      operators.Stats.logisticGdHist(feats, Seq("x1", "x2"), "y", "n",
-        rounds = 10)
+      operators.Stats.logisticGdHist(feats, Seq("x1", "x2"), "y", rounds = 10)
     }),
       {
       val prob = "1.0 / (1.0 + exp(-(w0 + w1 * x1 + w2 * x2)))"
@@ -1772,8 +1760,7 @@ private[graft] object StatsQueries {
       val hist = subj.groupBy(col("t"), col("x")).agg(
         sum(when(col("death"), 1L).otherwise(0L)).as("deaths"),
         count(lit(1)).as("total"))
-      operators.Stats.coxNewtonBinary(hist, "t", "x", "deaths",
-        "total")
+      operators.Stats.coxNewtonBinary(hist)
     }),
       {
       val mu = "CAST(n1r AS DOUBLE) * exp(beta) / (CAST(n0r AS DOUBLE)" +
@@ -1899,7 +1886,7 @@ private[graft] object StatsQueries {
             round((col("v") - mv) / sdv, 6).as("x2"),
             col("tr"), col("n"), col("sumy")))
       val fit = operators.Stats.logisticGdHist(feats,
-        Seq("x1", "x2"), "tr", "n", rounds = 8)
+        Seq("x1", "x2"), "tr", rounds = 8)
       val phat = least(lit(0.99), greatest(lit(0.01),
         lit(1.0) / (lit(1.0) + exp(-(col("w0") + col("w1") * col("x1")
           + col("w2") * col("x2"))))))
@@ -2183,7 +2170,7 @@ private[graft] object StatsQueries {
             round((col("v") - mv) / sdv, 6).as("x2"),
             col("tr"), col("n"), col("sumy")))
       val fit = operators.Stats.logisticGdHist(feats,
-        Seq("x1", "x2"), "tr", "n", rounds = 8)
+        Seq("x1", "x2"), "tr", rounds = 8)
       val osums = feats.groupBy(col("tr")).agg(
         sum(col("n")).as("n"),
         sum(pin6(col("x1") * col("n"))).as("sx1"),
@@ -2194,7 +2181,7 @@ private[graft] object StatsQueries {
         sum(col("sumy")).as("sy"),
         sum(pin6(col("x1") * col("sumy").cast("double"))).as("sx1y"),
         sum(pin6(col("x2") * col("sumy").cast("double"))).as("sx2y"))
-      val beta = operators.Stats.ols2Beta(osums, Seq("tr"))
+      val beta = operators.Stats.ols2Beta(osums)
       val bt = beta.filter(col("tr")).select(col("b0").as("b0_t"),
         col("b1").as("b1_t"), col("b2").as("b2_t"))
       val bc = beta.filter(!col("tr")).select(col("b0").as("b0_c"),
@@ -2729,8 +2716,7 @@ private[graft] object StatsQueries {
       // (source, Σtokens) exchange.
       operators.Sampling.mixturePlan(
         t(s, dir, "documents").select(col("source"),
-          size(TextAnalysis.tokens(col("text"))).as("toks")),
-        "source", col("toks"), budget = 2000000L, maxEpochs = 4)
+          size(TextAnalysis.tokens(col("text"))).as("toks")), budget = 2000000L, maxEpochs = 4)
     }),
       """WITH per AS (
         |  SELECT source, COUNT(*) AS n_docs,
@@ -2777,7 +2763,7 @@ private[graft] object StatsQueries {
       // (fertilityPartials/entropyGate/blocklistScan): without it the
       // NULL-skip only holds under Spark 4's ANSI size(NULL)=NULL default
       operators.Sampling.temperatureMixture(
-        t(s, dir, "documents"), "source",
+        t(s, dir, "documents"),
         TextAnalysis.tokenCount(coalesce(col("text"), lit(""))))
     }),
       // dyadic temperature grid: p^T via sqrt chains (IEEE-correctly-
@@ -3009,8 +2995,7 @@ private[graft] object StatsQueries {
       // broadcast shingle equi-join and checkpoints; each greedy round
       // is ONE marginal-gain aggregate + a 1-row broadcast coverage
       // update, exact DECIMAL end to end.
-      operators.Sampling.facilityLocationSelect(t(s, dir, "documents"),
-          "doc_id", "text", nCand = 30, k = 5)
+      operators.Sampling.facilityLocationSelect(t(s, dir, "documents"), nCand = 30, k = 5)
         .orderBy(col("rk"))
     }),
       {

@@ -21,7 +21,7 @@ private[graft] object TextAnalysisQueries {
       t(s, dir, "documents")
         .select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"),
-          TextAnalysis.bpeTokenCount(col("text")).cast("long")
+          TextAnalysis.bpeTokenCount.cast("long")
             .as("n_bpe_tokens"),
           length(col("text")).cast("long").as("n_chars_actual"))
         .orderBy(col("doc_id"))
@@ -35,18 +35,18 @@ private[graft] object TextAnalysisQueries {
     QuerySpec("q31_doc_quality", ((s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"),
-          TextAnalysis.wordCount(col("text")).cast("long").as("n_words"),
-          round(TextAnalysis.meanWordLen(col("text")), 6).as("mean_word_len"),
+          TextAnalysis.wordCount.cast("long").as("n_words"),
+          round(TextAnalysis.meanWordLen, 6).as("mean_word_len"),
           round(TextAnalysis.stopwordRatio(col("text")), 6).as("stopword_ratio"),
           round(TextAnalysis.punctRatio(col("text")), 6).as("punct_ratio"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
+          TextAnalysis.qualityScore.as("quality"))
         .orderBy(col("doc_id"))
     }),
       docQualitySql),
 
     QuerySpec("q32_doc_langid", ((s, dir) => {
       t(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
+        .select(col("doc_id"), TextAnalysis.langId.as("lang_pred"))
         .orderBy(col("doc_id"))
     }),
       langIdSql),
@@ -54,7 +54,7 @@ private[graft] object TextAnalysisQueries {
     QuerySpec("q33_doc_fingerprint", ((s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"),
-          TextAnalysis.fingerprint(col("text")).as("fp"))
+          TextAnalysis.fingerprint.as("fp"))
         .orderBy(col("doc_id"))
     }),
       s"""SELECT doc_id,
@@ -70,8 +70,8 @@ private[graft] object TextAnalysisQueries {
     QuerySpec("q48_doc_normalize", ((s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"),
-          TextAnalysis.normalize(col("text")).as("norm_text"),
-          md5(TextAnalysis.normalize(col("text"))).as("norm_hash"))
+          TextAnalysis.normalize.as("norm_text"),
+          md5(TextAnalysis.normalize).as("norm_hash"))
         .orderBy(col("doc_id"))
     }),
       """SELECT doc_id,
@@ -90,11 +90,11 @@ private[graft] object TextAnalysisQueries {
           (col("doc_id") % 256).cast("string"), lit(".7 ssn 123-45-"),
           format_string("%04d", col("doc_id") % 10000)).as("text"))
       withPii.select(col("doc_id"),
-        TextAnalysis.redactPii(col("text")).as("redacted"),
-        TextAnalysis.piiCounts(col("text")).getField("n_email")
+        TextAnalysis.redactPii.as("redacted"),
+        TextAnalysis.piiCounts.getField("n_email")
           .as("n_email"),
-        TextAnalysis.piiCounts(col("text")).getField("n_ip").as("n_ip"),
-        TextAnalysis.piiCounts(col("text")).getField("n_ssn").as("n_ssn"))
+        TextAnalysis.piiCounts.getField("n_ip").as("n_ip"),
+        TextAnalysis.piiCounts.getField("n_ssn").as("n_ssn"))
         .orderBy(col("doc_id"))
     }),
 
@@ -125,8 +125,8 @@ private[graft] object TextAnalysisQueries {
       val toks = TextAnalysis.tokens(col("text"))
       val total = size(toks).cast("double")
       t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.dupNgramFrac(col("text"), 2).as("dup2"),
-        TextAnalysis.dupNgramFrac(col("text"), 3).as("dup3"),
+        TextAnalysis.dupNgramFrac(2).as("dup2"),
+        TextAnalysis.dupNgramFrac(3).as("dup3"),
         when(total <= 0, lit(0.0)).otherwise(round(lit(1.0) -
           size(array_distinct(toks)).cast("double") / total, 6))
           .as("dup_word"))
@@ -180,8 +180,7 @@ private[graft] object TextAnalysisQueries {
       // pretraining sequence packing (concat-and-chunk at 2048 tokens):
       // per-pack doc counts and token totals. The prefix sum underneath is
       // the two-phase distributed form — no single-partition global window
-      TextAnalysis.packSequences(t(s, dir, "documents"), "doc_id", "text",
-          seqLen = 2048)
+      TextAnalysis.packSequences(t(s, dir, "documents"), seqLen = 2048)
         .groupBy(col("pack_id"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
         .orderBy(col("pack_id"))
@@ -211,7 +210,7 @@ private[graft] object TextAnalysisQueries {
       // side is map-side explode + broadcast join + partial count
       val docs = t(s, dir, "documents")
       TextAnalysis.contaminationOverlap(docs,
-          docs.filter(col("doc_id") < 10), "doc_id", "text", n = 5)
+          docs.filter(col("doc_id") < 10))
         .select(col("id").as("doc_id"), col("n_overlap"))
         .orderBy(col("doc_id"))
     }),
@@ -221,8 +220,7 @@ private[graft] object TextAnalysisQueries {
       // CCNet-style boilerplate: 3-gram passages occurring in >= 5 distinct
       // docs are corpus boilerplate; per-doc fraction of such passages.
       // One (shingle, count) shuffle; the Zipf head broadcasts back.
-      TextAnalysis.boilerplateStats(t(s, dir, "documents"),
-          "doc_id", "text", minDf = 5)
+      TextAnalysis.boilerplateStats(t(s, dir, "documents"), minDf = 5)
         .orderBy(col("doc_id"))
     }),
       """WITH tk AS (
@@ -253,8 +251,7 @@ private[graft] object TextAnalysisQueries {
       // cuts merge, only affected docs are rewritten. One corpus-wide
       // (span, count) partial-combined shuffle; rewrite is a map-side HOF
       // over affected docs only.
-      TextAnalysis.spanDedup(t(s, dir, "documents"),
-          "doc_id", "text", n = 6)
+      TextAnalysis.spanDedup(t(s, dir, "documents"), n = 6)
         .orderBy(col("doc_id"))
     }),
       """WITH tk AS (
@@ -351,8 +348,7 @@ private[graft] object TextAnalysisQueries {
          |  SELECT doc_id, unnest(raw) AS word FROM tk
          |), cnt AS (
          |  SELECT doc_id,
-         |    CAST(SUM(${graft.operators.Bpe.replaySqlTokenCount("word",
-                  graft.operators.Bpe.FixtureMerges)}) AS BIGINT) AS n_bpe
+         |    CAST(SUM(${graft.operators.Bpe.replaySqlTokenCount(graft.operators.Bpe.FixtureMerges)}) AS BIGINT) AS n_bpe
          |  FROM w GROUP BY doc_id
          |)
          |SELECT tk.doc_id, CAST(len(tk.raw) AS BIGINT) AS n_words,
@@ -372,7 +368,7 @@ private[graft] object TextAnalysisQueries {
       // and count bounds (n_words <= n_bpe <= non-space chars). A
       // broken trainer or encoder flips a boolean and hash-mismatches.
       val docs = t(s, dir, "documents")
-      val merges = Bpe.train(docs, "text", nMerges = 50)
+      val merges = Bpe.train(docs, nMerges = 50)
       val mergeKeys = merges.map { case (a, b) => a + " " + b }
       val mergesLit = typedlit(merges.map(p => Seq(p._1, p._2)))
       val words = TextAnalysis.tokens(col("text"))
@@ -407,7 +403,7 @@ private[graft] object TextAnalysisQueries {
     QuerySpec("q86_doc_chunk", ((s, dir) => {
       // RAG/context chunking: 64-token windows every 48 tokens —
       // zero-shuffle map-side windowing (plan-pinned)
-      TextAnalysis.chunkDocuments(t(s, dir, "documents"), "doc_id", "text",
+      TextAnalysis.chunkDocuments(t(s, dir, "documents"),
           chunkLen = 64, stride = 48)
         .orderBy(col("doc_id"), col("chunk_id"))
     }),
@@ -426,7 +422,7 @@ private[graft] object TextAnalysisQueries {
       // bigram-LM fluency scoring (add-0.5 smoothing) — the stronger
       // cousin of q76's unigram rarity; DECIMAL accumulation keeps the
       // per-doc ln-sum order-independent
-      TextAnalysis.bigramSurprisal(t(s, dir, "documents"), "doc_id", "text")
+      TextAnalysis.bigramSurprisal(t(s, dir, "documents"))
         .orderBy(col("doc_id"))
     }),
       s"""WITH base AS (
@@ -468,7 +464,7 @@ private[graft] object TextAnalysisQueries {
       // verify join kills false positives) — same oracle SQL.
       val docs = t(s, dir, "documents")
       TextAnalysis.contaminationOverlapBloom(docs,
-          docs.filter(col("doc_id") < 10), "doc_id", "text", n = 5)
+          docs.filter(col("doc_id") < 10))
         .select(col("id").as("doc_id"), col("n_overlap"))
         .orderBy(col("doc_id"))
     }),
@@ -508,12 +504,12 @@ private[graft] object TextAnalysisQueries {
       // RE-TRAINS via an unrolled CTE chain and must land on identical
       // weights, so a diverged gradient anywhere is a hash mismatch.
       val docs = t(s, dir, "documents")
-      val label = (TextAnalysis.qualityScore(col("text")) >= 0.3)
+      val label = (TextAnalysis.qualityScore >= 0.3)
       // persisted-model artifact (the pqCodebookFor contract): train
       // once per corpus dir, scoring pays scoring
       val w = logRegWeightsFor(s, dir, docs, label.cast("double"),
-        iters = 32, eta = 8.0)
-      operators.QualityClassifier.score(docs, "doc_id", "text", w,
+        iters = 32)
+      operators.QualityClassifier.score(docs, w,
           extra = Seq(label.as("is_hq")))
         .select(col("id").as("doc_id"), col("p"), col("pred"), col("is_hq"))
         .orderBy(col("doc_id"))
@@ -531,8 +527,7 @@ private[graft] object TextAnalysisQueries {
     QuerySpec("q73_doc_tfidf", ((s, dir) => {
       // per-doc top-3 TF-IDF terms; integer rank key (tf desc, df asc,
       // term asc) so no rank ever hangs on the last bit of ln()
-      TextAnalysis.tfidfTopTerms(t(s, dir, "documents"),
-          "doc_id", "text", topN = 3)
+      TextAnalysis.tfidfTopTerms(t(s, dir, "documents"), topN = 3)
         .orderBy(col("doc_id"), col("rk"))
     }),
       """WITH terms AS (
@@ -565,7 +560,7 @@ private[graft] object TextAnalysisQueries {
       val docs = t(s, dir, "documents")
       val base = docs.select(col("source"), col("lang"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("toks"),
-        TextAnalysis.qualityScore(col("text")).as("q"))
+        TextAnalysis.qualityScore.as("q"))
       val bySrc = base.groupBy(col("source")).agg(
         count(lit(1)).as("n_docs"),
         sum(col("toks")).cast("long").as("n_tokens"),
@@ -586,8 +581,7 @@ private[graft] object TextAnalysisQueries {
       // unigram LM surprisal (perplexity proxy) from the corpus's own
       // token counts; decimal-accumulated per-doc sum keeps the double
       // arithmetic order-independent across engines
-      TextAnalysis.unigramSurprisal(t(s, dir, "documents"),
-          "doc_id", "text")
+      TextAnalysis.unigramSurprisal(t(s, dir, "documents"))
         .orderBy(col("doc_id"))
     }),
       """WITH toks AS (
@@ -615,7 +609,7 @@ private[graft] object TextAnalysisQueries {
       // engine-portable md5-window boundary rule). Zero shuffle until the
       // digest dup-count exchange; the cut scan is one codegen'd kernel
       // pass per row (CdcPairs).
-      TextAnalysis.cdcChunks(t(s, dir, "documents"), "doc_id", "text")
+      TextAnalysis.cdcChunks(t(s, dir, "documents"))
         .select(col("id").as("doc_id"), col("chunk_id"), col("start_pos"),
           col("chunk_len"), col("digest"), col("n_dups"))
         .orderBy(col("doc_id"), col("chunk_id"))
@@ -655,7 +649,7 @@ private[graft] object TextAnalysisQueries {
       // by. Same two-phase distributed prefix sum; only the per-doc
       // counter changes, and the oracle replays both the merge algebra
       // and the packing algebra exactly.
-      TextAnalysis.packSequences(t(s, dir, "documents"), "doc_id", "text",
+      TextAnalysis.packSequences(t(s, dir, "documents"),
           seqLen = 2048, counter = Some(
             Bpe.tokenCount(col("text"), Bpe.FixtureMerges)))
         .groupBy(col("pack_id"))
@@ -671,8 +665,7 @@ private[graft] object TextAnalysisQueries {
          |  SELECT doc_id, unnest(raw) AS word FROM tk
          |), cnt AS (
          |  SELECT doc_id,
-         |    CAST(SUM(${graft.operators.Bpe.replaySqlTokenCount("word",
-                  graft.operators.Bpe.FixtureMerges)}) AS BIGINT) AS n_bpe
+         |    CAST(SUM(${graft.operators.Bpe.replaySqlTokenCount(graft.operators.Bpe.FixtureMerges)}) AS BIGINT) AS n_bpe
          |  FROM w GROUP BY doc_id
          |), toks AS (
          |  SELECT tk.doc_id, COALESCE(cnt.n_bpe, 0) AS n_tokens
@@ -694,7 +687,7 @@ private[graft] object TextAnalysisQueries {
       // undercounts; overcount <= eps*N w.p. 1-delta). The oracle replays
       // the exact counts and pins both booleans TRUE — the q19/q96
       // sketch-gate pattern.
-      operators.TextAnalysis.heavyHitters(t(s, dir, "documents"), "text",
+      operators.TextAnalysis.heavyHitters(t(s, dir, "documents"),
           minShare = 0.002)
         .orderBy(col("token"))
     }),
@@ -715,7 +708,7 @@ private[graft] object TextAnalysisQueries {
       // bounded symbol share — all in INTEGER arithmetic (no double ratio
       // ever forms), one map-side codegen'd projection, no shuffle. The
       // cheapest gate of the cleaning cascade, so it runs first at 100 TB.
-      TextAnalysis.gopherRules(t(s, dir, "documents"), "doc_id", "text")
+      TextAnalysis.gopherRules(t(s, dir, "documents"))
         .orderBy(col("doc_id"))
     }),
       s"""WITH st AS (
@@ -763,8 +756,7 @@ private[graft] object TextAnalysisQueries {
       // partial-combined shuffle on the canonical key.
       operators.Urls.canonicalDedup(
           t(s, dir, "documents").select(col("doc_id"),
-            messyUrlCol.as("url")),
-          "doc_id", "url")
+            messyUrlCol.as("url")))
         .orderBy(col("canonical_url"))
     }),
       """SELECT 'https://www.site' || CAST((doc_id // 4) % 20 AS VARCHAR)
@@ -783,8 +775,7 @@ private[graft] object TextAnalysisQueries {
       // selection by integer count gate, never a double order-by.
       val sliceA = col("source").isin(
         (0 until 10).map(i => s"src$i"): _*)
-      TextAnalysis.tokenDrift(t(s, dir, "documents"), "text", sliceA,
-          minCount = 10L)
+      TextAnalysis.tokenDrift(t(s, dir, "documents"), sliceA, minCount = 10L)
         .orderBy(col("token"))
     }),
       s"""WITH tk AS (
@@ -842,7 +833,7 @@ private[graft] object TextAnalysisQueries {
       // phrase-aware vocab/dedup. Bigrams form map-side; one (w1,w2)
       // partial-combined exchange; marginals reduce the count table.
       operators.TextAnalysis.pmiCollocations(
-          t(s, dir, "documents"), "text", minCount = 5L)
+          t(s, dir, "documents"), minCount = 5L)
         .orderBy(col("w1"), col("w2"))
     }),
       """WITH tk AS (
@@ -931,12 +922,12 @@ private[graft] object TextAnalysisQueries {
       t(s, dir, "documents").select(col("doc_id"), col("text"))
         .withColumn("html", html)
         .select(col("doc_id"),
-          TextAnalysis.htmlTitle(col("html")).as("title"),
-          (TextAnalysis.htmlParagraphs(col("html")) === col("text"))
+          TextAnalysis.htmlTitle.as("title"),
+          (TextAnalysis.htmlParagraphs === col("text"))
             .as("recovered"),
-          length(TextAnalysis.htmlParagraphs(col("html"))).cast("long")
+          length(TextAnalysis.htmlParagraphs).cast("long")
             .as("main_len"),
-          length(TextAnalysis.stripHtml(col("html"))).cast("long")
+          length(TextAnalysis.stripHtml).cast("long")
             .as("full_len"))
         .orderBy(col("doc_id"))
     }),
@@ -1021,8 +1012,7 @@ private[graft] object TextAnalysisQueries {
       // c-TF-IDF cluster naming (the BERTopic scoring): each source's
       // 5 most characteristic terms — one corpus-wide (class, term)
       // exchange, vocab-sized everything after.
-      TextAnalysis.cTfIdf(t(s, dir, "documents"), "source", "text",
-          topK = 5)
+      TextAnalysis.cTfIdf(t(s, dir, "documents"), topK = 5)
         .orderBy(col("class"), col("rk"))
     }),
       """WITH tf AS (
@@ -1059,9 +1049,8 @@ private[graft] object TextAnalysisQueries {
       val docs = t(s, dir, "documents")
       operators.Stats.cohenKappa(
         docs.select(
-          (TextAnalysis.qualityScore(col("text")) >= 0.3).as("a"),
-          (TextAnalysis.langId(col("text")) === "en").as("b")),
-        "a", "b")
+          (TextAnalysis.qualityScore >= 0.3).as("a"),
+          (TextAnalysis.langId === "en").as("b")))
     }),
       {
       val profiles = TextAnalysis.langProfiles
@@ -1126,12 +1115,11 @@ private[graft] object TextAnalysisQueries {
       // oracle re-trains the 8-step GD via the unrolled CTE chain and
       // replays the identical bin algebra.
       val docs = t(s, dir, "documents")
-      val label = (TextAnalysis.qualityScore(col("text")) >= 0.3)
+      val label = (TextAnalysis.qualityScore >= 0.3)
       val w = logRegWeightsFor(s, dir, docs, label.cast("double"),
-        iters = 8, eta = 8.0)
-      val scored = operators.QualityClassifier.score(docs, "doc_id",
-        "text", w, extra = Seq(label.as("is_hq")))
-      operators.Stats.calibration(scored, "p", "is_hq")
+        iters = 8)
+      val scored = operators.QualityClassifier.score(docs, w, extra = Seq(label.as("is_hq")))
+      operators.Stats.calibration(scored)
     }),
       s"""WITH ${q91Ctes(8, 8.0)},
          |scored AS (
@@ -1177,8 +1165,8 @@ private[graft] object TextAnalysisQueries {
       // brute-forces NOT EXISTS dominance over the same points (a
       // genuine differential, the q141 pattern).
       val docs = t(s, dir, "documents")
-      operators.TopK.paretoFrontier(docs, "doc_id", col("n_chars"),
-          TextAnalysis.qualityScore(col("text")))
+      operators.TopK.paretoFrontier(docs, col("n_chars"),
+          TextAnalysis.qualityScore)
         .orderBy(col("doc_id"))
     }),
       s"""WITH base AS (
@@ -1217,7 +1205,7 @@ private[graft] object TextAnalysisQueries {
       val docs = t(s, dir, "documents")
       TextAnalysis.noveltyVsReference(
           docs.filter(col("source") =!= "src0"),
-          docs.filter(col("source") === "src0"), "doc_id", "text", n = 3)
+          docs.filter(col("source") === "src0"))
         .withColumnRenamed("id", "doc_id")
         .orderBy(col("doc_id"))
     }),
@@ -1254,8 +1242,7 @@ private[graft] object TextAnalysisQueries {
       // Heaps'-law vocabulary growth over 10 deterministic ingest
       // batches: new types, cumulative vocab, running type-token ratio
       // — "is the crawl still adding content or repeating itself".
-      TextAnalysis.vocabGrowth(t(s, dir, "documents"), "doc_id",
-          "text", batches = 10)
+      TextAnalysis.vocabGrowth(t(s, dir, "documents"), batches = 10)
         .orderBy(col("batch"))
     }),
       s"""WITH mx AS (SELECT max(doc_id) AS mx FROM documents),
@@ -1290,7 +1277,7 @@ private[graft] object TextAnalysisQueries {
       // Zipf rank-frequency least-squares fit over the vocabulary:
       // natural text sits near slope -1; template/ID corpora don't.
       // All regression sums in exact DECIMAL over the bounded vocab.
-      TextAnalysis.zipfFit(t(s, dir, "documents"), "text")
+      TextAnalysis.zipfFit(t(s, dir, "documents"))
     }),
       s"""WITH vocab AS MATERIALIZED (
          |  SELECT token, count(*) AS c
@@ -1326,12 +1313,12 @@ private[graft] object TextAnalysisQueries {
       // (q177, broadcast join-back) fold into one keep/drop decision —
       // the headline composition of the per-doc signal family.
       val docs = t(s, dir, "documents")
-      val pr = operators.Stats.percentileRanks(docs, "n_chars")
+      val pr = operators.Stats.percentileRanks(docs)
         .select(col("v").as("n_chars_v"), col("pct_rank").as("len_pr"))
       val scored = docs.select(col("doc_id"),
-        TextAnalysis.qualityScore(col("text")).as("quality"),
-        TextAnalysis.dupNgramFrac(col("text"), 3).as("dup3"),
-        (TextAnalysis.langId(col("text")) === "en").as("is_en"),
+        TextAnalysis.qualityScore.as("quality"),
+        TextAnalysis.dupNgramFrac(3).as("dup3"),
+        (TextAnalysis.langId === "en").as("is_en"),
         col("n_chars").cast("long").as("n_chars_v"))
       scored.join(operators.Hints.boundedBroadcast(pr, "value_grid"),
         Seq("n_chars_v"))
@@ -1410,8 +1397,7 @@ private[graft] object TextAnalysisQueries {
       // scored by sum of word degree/frequency — doc-level metadata
       // enrichment (q155 names clusters; this names documents). All
       // aggregates and the rank window key on the doc id.
-      TextAnalysis.rakeKeywords(t(s, dir, "documents"), "doc_id",
-          "text")
+      TextAnalysis.rakeKeywords(t(s, dir, "documents"))
         .orderBy(col("doc_id"))
     }),
       s"""WITH tk AS (
@@ -1470,7 +1456,7 @@ private[graft] object TextAnalysisQueries {
       // profile, so its misclassification pattern is part of the pin.
       val docs = t(s, dir, "documents")
       val pred = docs.select(col("lang").as("actual"),
-        TextAnalysis.langId(col("text")).as("predicted"))
+        TextAnalysis.langId.as("predicted"))
       val cm = pred.groupBy(col("actual"), col("predicted"))
         .agg(count(lit(1)).as("n"))
       val tot = cm.groupBy(col("actual"))
@@ -1522,8 +1508,7 @@ private[graft] object TextAnalysisQueries {
       // strings land far outside the human band). Counts are pure
       // regexp projections riding the scan; per-doc grades round(6)
       // then DECIMAL-accumulate into the per-source mean.
-      TextAnalysis.readabilityBySource(t(s, dir, "documents"),
-        "source", "text")
+      TextAnalysis.readabilityBySource(t(s, dir, "documents"))
     }),
       """WITH g AS (
         |  SELECT grp,
@@ -1552,8 +1537,7 @@ private[graft] object TextAnalysisQueries {
       // over each source's pooled token stream — the template/bot-feed
       // detector at corpus granularity. One (group, gram) partial-
       // combined exchange per n; exact integer quotients.
-      TextAnalysis.distinctNgramDiversity(t(s, dir, "documents"),
-        "source", "text")
+      TextAnalysis.distinctNgramDiversity(t(s, dir, "documents"))
     }),
       """WITH tk AS MATERIALIZED (
         |  SELECT source AS grp,
@@ -1616,8 +1600,7 @@ private[graft] object TextAnalysisQueries {
          |  SELECT doc_id, unnest(raw) AS word FROM tk
          |), cnt AS (
          |  SELECT doc_id,
-         |    CAST(SUM(${graft.operators.Bpe.replaySqlTokenCount("word",
-                  graft.operators.Bpe.FixtureMerges)}) AS BIGINT) AS n_bpe
+         |    CAST(SUM(${graft.operators.Bpe.replaySqlTokenCount(graft.operators.Bpe.FixtureMerges)}) AS BIGINT) AS n_bpe
          |  FROM w GROUP BY doc_id
          |)
          |SELECT tk.lang, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1640,7 +1623,7 @@ private[graft] object TextAnalysisQueries {
       val base = docs.select(col("source"), col("lang"),
         (col("doc_id") % 4).as("batch"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("toks"),
-        TextAnalysis.qualityScore(col("text")).as("q"))
+        TextAnalysis.qualityScore.as("q"))
       val part = base.groupBy(col("source"), col("batch")).agg(
         count(lit(1)).as("n"), sum(col("toks")).as("tk"),
         sum(col("q").cast("decimal(38,6)")).as("qsum"))
@@ -1716,9 +1699,9 @@ private[graft] object TextAnalysisQueries {
       // as the q66 two-phase bucketed prefix sum (no global sort, no
       // single-partition window); per-source rollup of what made the cut.
       val docs = t(s, dir, "documents")
-      val sel = Sampling.budgetSelect(docs, "doc_id",
+      val sel = Sampling.budgetSelect(docs,
         TextAnalysis.tokenCount(col("text")),
-        TextAnalysis.qualityScore(col("text")), budget = 10000L)
+        TextAnalysis.qualityScore, budget = 10000L)
       docs.select(col("doc_id").as("id"), col("source"))
         .join(sel, Seq("id"))
         .groupBy(col("source"))
@@ -1924,7 +1907,7 @@ private[graft] object TextAnalysisQueries {
       // at a ~2/(w+1) sampling rate the corpus never pays full-text
       // comparison for.
       val fps = operators.TextAnalysis.winnowingFingerprints(
-        t(s, dir, "documents"), "doc_id", "text")
+        t(s, dir, "documents"))
       val fpd = fps.select(col("id"), col("h")).distinct()
       val keep = fpd.groupBy(col("h")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= 100)
@@ -1960,7 +1943,6 @@ private[graft] object TextAnalysisQueries {
       // Token-keyed scoring joins (AQE Zipf-head), DECIMAL ln-sums,
       // one driver scalar (train vocab).
       operators.TextAnalysis.bigramCrossEntropy(t(s, dir, "documents"),
-          "doc_id", "text",
           isTrain = substring(md5(col("doc_id").cast("string")), 1, 1)
             < lit("c"))
         .orderBy(col("doc_id"))),
@@ -2487,7 +2469,6 @@ private[graft] object TextAnalysisQueries {
       // vocabulary) and xent_kn ≈ 3.42 nats vs q232's add-1 readout —
       // the model-quality gap KN exists to close.
       operators.TextAnalysis.kneserNeyXent(t(s, dir, "documents"),
-        "doc_id", "text",
         substring(md5(col("doc_id").cast("string")), 1, 1) < lit("c"))
     }),
       s"""WITH base AS (
@@ -2690,8 +2671,7 @@ private[graft] object TextAnalysisQueries {
       // tail the plain mean (returned alongside) averages away. Same
       // plan as the surprisal family: one (doc, bigram) exchange,
       // token-keyed model joins, per-doc entity-bounded window.
-      operators.TextAnalysis.minKSurprisal(t(s, dir, "documents"),
-          "doc_id", "text")
+      operators.TextAnalysis.minKSurprisal(t(s, dir, "documents"))
         .orderBy(col("doc_id"))
     }),
       s"""WITH base AS (
@@ -2825,8 +2805,7 @@ private[graft] object TextAnalysisQueries {
       // exercises the automaton's suffix-output links. Counting is
       // greedy leftmost non-overlapping per pattern = the replace()-
       // count every SQL engine replays.
-      TextAnalysis.blocklistScan(t(s, dir, "documents"),
-        "source", "text", blocklistPatterns)
+      TextAnalysis.blocklistScan(t(s, dir, "documents"), blocklistPatterns)
     }),
       // greedy leftmost non-overlapping occurrence counting IS what a
       // replace()-based count computes — the oracle replays the automaton
@@ -2866,7 +2845,7 @@ private[graft] object TextAnalysisQueries {
             .otherwise(lit("")),
           when(col("doc_id") % 11 === 0, lit("\u0007"))
             .otherwise(lit(""))).as("text"))
-      TextAnalysis.encodingAudit(noisy, "source", "text")
+      TextAnalysis.encodingAudit(noisy)
     }),
       // same doc_id-keyed noise injection as the Spark side (chr() code
       // points == the Scala \u escapes), then the same three detectors
@@ -2910,11 +2889,10 @@ private[graft] object TextAnalysisQueries {
       // ONE corpus rollup; the stage x tier range join is bounded
       // nested-loop algebra (see Sampling.curriculumPlan).
       val perDoc = t(s, dir, "documents").select(
-        least(floor(TextAnalysis.qualityScore(col("text")) * 4), lit(3))
+        least(floor(TextAnalysis.qualityScore * 4), lit(3))
           .cast("int").as("tier"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("toks"))
-      operators.Sampling.curriculumPlan(perDoc, col("tier"),
-        col("toks"), budget = 2000000L)
+      operators.Sampling.curriculumPlan(perDoc, budget = 2000000L)
     }),
       // the q31 quality formula, quartile-quantized, then the q311
       // integer mixture algebra per cumulative stage pool
@@ -2986,7 +2964,7 @@ private[graft] object TextAnalysisQueries {
       val noisy = t(s, dir, "documents").select(col("source"),
         when(col("doc_id") % 13 === 0, lit("spam " * 40))
           .otherwise(col("text")).as("text"))
-      TextAnalysis.entropyGate(noisy, "source", "text")
+      TextAnalysis.entropyGate(noisy)
     }),
       // per-character GROUP BY replay of functions.CharEntropy: round(9)
       // DECIMAL terms sum exactly (order-independent), round(6) publish
@@ -3079,8 +3057,7 @@ private[graft] object TextAnalysisQueries {
             coalesce(col("text"), lit("")),
             when(col("doc_id") % 9 === 0,
                 lit(" all rights reserved worldwide"))
-              .otherwise(lit(""))).as("text")),
-        "source", "text", minDocs = 10L)
+              .otherwise(lit(""))).as("text")), minDocs = 10L)
     }),
       """WITH aug AS (
         |  SELECT doc_id, source,
@@ -3134,7 +3111,7 @@ private[graft] object TextAnalysisQueries {
       // a 2% drift flag — the rollout readout that catches a source
       // whose content mix (or encoding) shifted under a tokenizer.
       TextAnalysis.fertilityBracket(
-        TextAnalysis.fertilityPartials(t(s, dir, "documents"), "text"))
+        TextAnalysis.fertilityPartials(t(s, dir, "documents")))
     }),
       // integer (toks, chars) sums per (lang, source); the zero-token
       // branches are explicit in BOTH engines (the q311 oracle lesson)
@@ -3177,8 +3154,7 @@ private[graft] object TextAnalysisQueries {
       // O(trie edges) — where a LIKE-per-pattern plan would re-scan
       // every document 3375 times. Only (source, pattern) rows with
       // hits survive; zero-hit patterns are dropped in both engines.
-      TextAnalysis.blocklistScan(t(s, dir, "documents"),
-        "source", "text", dictBlocklistPatterns, dropZeroHits = true)
+      TextAnalysis.blocklistScan(t(s, dir, "documents"), dictBlocklistPatterns, dropZeroHits = true)
     }),
       // the replace()-count replay per (doc, pattern) over the full
       // 15^3 trigram dictionary; '//' is DuckDB integer division
@@ -3216,8 +3192,7 @@ private[graft] object TextAnalysisQueries {
             when(col("doc_id") % 7 === 0,
                 lit("breaking news update now live "))
               .otherwise(lit("")),
-            coalesce(col("text"), lit(""))).as("text")),
-        "source", "text", prefixLen = 24, topK = 3)
+            coalesce(col("text"), lit(""))).as("text")), prefixLen = 24, topK = 3)
     }),
       """WITH aug AS (
         |  SELECT source, CASE WHEN doc_id % 7 = 0

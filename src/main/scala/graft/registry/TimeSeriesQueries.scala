@@ -18,7 +18,7 @@ private[graft] object TimeSeriesQueries {
   val specs: Seq[QuerySpec] = Seq(
 
     QuerySpec("q20_evt_hourly", ((s, dir) => {
-      Sessionize.tumblingAgg(t(s, dir, "events"), "ts", "hour")
+      Sessionize.tumblingAgg(t(s, dir, "events"))
         .orderBy(col("window_start"), col("event_type"))
     }),
       """SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -27,8 +27,7 @@ private[graft] object TimeSeriesQueries {
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     QuerySpec("q22_evt_sessionize", ((s, dir) => {
-      Sessionize.sessionSummary(t(s, dir, "events"), "user_id", "ts",
-          "value", gapSeconds = 1800)
+      Sessionize.sessionSummary(t(s, dir, "events"))
         .orderBy(col("user_id"), col("session_seq"))
     }),
       """WITH flagged AS (
@@ -59,7 +58,7 @@ private[graft] object TimeSeriesQueries {
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"), col("ts"),
           col("value").as("click_value"))
-      operators.AsOfJoin.asofJoin(purchases, clicks, "user_id", "ts", "ts",
+      operators.AsOfJoin.asofJoin(purchases, clicks, "ts", "ts",
           Seq("click_id", "click_value"))
         .select(col("event_id"), col("user_id"), col("click_id"),
           col("click_value"))
@@ -91,7 +90,7 @@ private[graft] object TimeSeriesQueries {
       val touches = ev.filter(col("event_type") =!= "purchase")
         .select(col("user_id"), col("ts"),
           col("event_type").as("touch_type"), col("event_id"))
-      operators.AsOfJoin.asofJoin(purchases, touches, "user_id",
+      operators.AsOfJoin.asofJoin(purchases, touches,
           "ts", "ts", Seq("touch_type"), rightTieBreak = Some("event_id"))
         .groupBy(coalesce(col("touch_type"), lit("none")).as("touch_type"))
         .agg(count(lit(1)).as("n_purchases"))
@@ -123,8 +122,7 @@ private[graft] object TimeSeriesQueries {
       // monitoring/forecast consumers need instead of silently absent
       // buckets. The spine explodes off a tiny per-key extent aggregate;
       // windows are per-type (calendar-bounded state).
-      operators.TimeSeries.gapFillHourly(t(s, dir, "events"),
-          "event_type", "ts", "value")
+      operators.TimeSeries.gapFillHourly(t(s, dir, "events"))
         .orderBy(col("key"), col("hour"))
     }),
       """WITH base AS (
@@ -171,8 +169,7 @@ private[graft] object TimeSeriesQueries {
       // shape the reference's warehouse loads land. Entity-bounded
       // windows on one user-keyed exchange; ties broken by event_id so
       // replays are bit-identical.
-      operators.TimeSeries.scd2History(t(s, dir, "events"),
-          "user_id", "ts", "event_type", "event_id")
+      operators.TimeSeries.scd2History(t(s, dir, "events"))
         .orderBy(col("user_id"), col("version"))
     }),
       """WITH m AS (
@@ -198,8 +195,7 @@ private[graft] object TimeSeriesQueries {
       // all pairwise hourly slopes (bursts can't fool it the way they
       // fool least squares). The pair set is quadratic in HOURS —
       // calendar-bounded, independent of corpus size.
-      operators.TimeSeries.theilSenTrend(t(s, dir, "events"),
-          "event_type", "ts")
+      operators.TimeSeries.theilSenTrend(t(s, dir, "events"))
         .orderBy(col("key"))
     }),
       """WITH abs0 AS MATERIALIZED (
@@ -234,8 +230,7 @@ private[graft] object TimeSeriesQueries {
       // learns its own mean/sigma from exact integer sums; hours beyond
       // 3 sigma OF THEIR SLOT are flagged — "is 3 AM traffic weird for
       // 3 AM". Profile is types x 24 rows, broadcast back.
-      operators.TimeSeries.seasonalAnomalies(t(s, dir, "events"),
-          "event_type", "ts")
+      operators.TimeSeries.seasonalAnomalies(t(s, dir, "events"))
         .orderBy(col("key"), col("hour"))
     }),
       """WITH base AS MATERIALIZED (
@@ -269,8 +264,7 @@ private[graft] object TimeSeriesQueries {
       // max(0, S + z - k) recurrence, computed as a prefix-sum +
       // prefix-min window identity over EXACT decimals — catches
       // sustained drifts the per-hour 3-sigma gate (q158) never trips.
-      operators.TimeSeries.cusumChangepoints(t(s, dir, "events"),
-          "event_type", "ts")
+      operators.TimeSeries.cusumChangepoints(t(s, dir, "events"))
         .orderBy(col("key"), col("hour"))
     }),
       """WITH base AS MATERIALIZED (
@@ -318,8 +312,7 @@ private[graft] object TimeSeriesQueries {
       // DAU / trailing-7-day WAU / stickiness per day: user-days fan
       // out map-side to the days they cover (bounded explode), then one
       // (user, day) distinct — no per-day rescan, no range self-join.
-      operators.TimeSeries.activeUsers(t(s, dir, "events"), "ts",
-          "user_id")
+      operators.TimeSeries.activeUsers(t(s, dir, "events"))
         .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
           col("dau"), col("wau"), col("stickiness"))
         .orderBy(col("day"))
@@ -349,8 +342,7 @@ private[graft] object TimeSeriesQueries {
       val ev = t(s, dir, "events")
       operators.TimeSeries.kaplanMeierRetention(
         ev.select(concat_ws(":", col("user_id"), col("event_type"))
-          .as("unit"), col("ts")),
-        "unit", "ts")
+          .as("unit"), col("ts")))
         .orderBy(col("t_days"))
     }),
       """WITH per AS MATERIALIZED (
@@ -391,8 +383,7 @@ private[graft] object TimeSeriesQueries {
       // additive trend/seasonal/residual decomposition of the hourly
       // event series per type: centered 24h moving average, per-slot
       // seasonal means of the detrended series, residual remainder.
-      operators.TimeSeries.stlDecompose(t(s, dir, "events"),
-          "event_type", "ts")
+      operators.TimeSeries.stlDecompose(t(s, dir, "events"))
         .orderBy(col("key"), col("hour"))
     }),
       """WITH base AS MATERIALIZED (
@@ -427,8 +418,7 @@ private[graft] object TimeSeriesQueries {
       // Goh-Barabasi burstiness of each user's inter-event gaps:
       // -1 metronome, 0 Poisson, ->1 bursts — the organic-vs-scheduler
       // behavioral fingerprint. One entity-keyed exchange.
-      operators.TimeSeries.interEventBurstiness(t(s, dir, "events"),
-          "user_id", "ts")
+      operators.TimeSeries.interEventBurstiness(t(s, dir, "events"))
         .orderBy(col("entity"))
     }),
       """WITH e AS (
@@ -473,8 +463,7 @@ private[graft] object TimeSeriesQueries {
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), (-unix_micros(col("ts"))).as("nts"),
           unix_micros(col("ts")).as("pts"))
-      val joined = operators.AsOfJoin.asofJoin(clicks, purchases,
-        "user_id", "nts", "nts", Seq("pts"),
+      val joined = operators.AsOfJoin.asofJoin(clicks, purchases, "nts", "nts", Seq("pts"),
         rightTieBreak = Some("pts"))
       val lags = joined
         .select((col("pts") - (-col("nts"))).as("lag_us"))
@@ -513,8 +502,7 @@ private[graft] object TimeSeriesQueries {
       // duration and events-per-session — the rollup a product
       // dashboard publishes; one user-keyed session pass then a 5-number
       // global aggregate.
-      val ss = Sessionize.sessionSummary(t(s, dir, "events"), "user_id",
-        "ts", "value", gapSeconds = 1800)
+      val ss = Sessionize.sessionSummary(t(s, dir, "events"))
       ss.select(
           (unix_timestamp(col("session_end"))
             - unix_timestamp(col("session_start"))).as("dur_s"),
@@ -564,8 +552,7 @@ private[graft] object TimeSeriesQueries {
       // alarm level. Powers-of-two weights make the whole computation
       // exact integer arithmetic with ONE double division — no float
       // recurrence, no evaluation-order sensitivity.
-      operators.TimeSeries.ewmaHourly(t(s, dir, "events"), "event_type",
-        "ts")
+      operators.TimeSeries.ewmaHourly(t(s, dir, "events"))
     }),
       """WITH hourly AS MATERIALIZED (
         |  SELECT event_type AS key, date_trunc('hour', ts) AS hour,

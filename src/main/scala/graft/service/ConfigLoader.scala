@@ -104,8 +104,7 @@ object ConfigLoader {
     val kv = parseDoc(text)
     val warn = Seq.newBuilder[String]
 
-    def bool(k: String, default: Boolean) =
-      kv.get(k).map(_.toBoolean).getOrElse(default)
+    def bool(k: String) = kv.get(k).exists(_.toBoolean)
     def dur(k: String, default: Duration) =
       kv.get(k).map(parseDuration).getOrElse(default)
 
@@ -129,7 +128,7 @@ object ConfigLoader {
     // ExportDuration is unset — an explicit duration wins, silently, like
     // the reference (config/config.go:172-180)
     val durationSet = kv.contains("ExportDuration")
-    val gfbd = bool("GroupFilesByDay", default = false) && !durationSet
+    val gfbd = bool("GroupFilesByDay") && !durationSet
     if (gfbd)
       warn += """WARNING: The "GroupFilesByDay" option is deprecated. Please use "ExportDuration" instead."""
     else if (!durationSet)
@@ -138,14 +137,14 @@ object ConfigLoader {
     // provider-specific StorageOnly folds (config/config.go:225-244):
     // local only supports storage; the deprecated per-section S3Only /
     // GCSOnly flags raise the main-level option
-    var storageOnly = bool("StorageOnly", default = false)
+    var storageOnly = bool("StorageOnly")
     provider match {
       case Some("local") =>
         warn += """WARNING: The "local" provider only supports "StorageOnly = true"."""
         storageOnly = true
-      case Some("aws") if bool("s3.S3Only", default = false) =>
+      case Some("aws") if bool("s3.S3Only") =>
         storageOnly = true
-      case Some("gcp") if bool("gcs.GCSOnly", default = false) =>
+      case Some("gcp") if bool("gcs.GCSOnly") =>
         storageOnly = true
       case _ => ()
     }
@@ -163,10 +162,10 @@ object ConfigLoader {
       backoff = dur("Backoff", Duration.ofSeconds(30)),
       backoffStepsMax = kv.get("BackoffStepsMax").map(_.toInt).getOrElse(8),
       storageOnly = storageOnly,
-      saveAsJson = bool("SaveAsJson", default = false),
+      saveAsJson = bool("SaveAsJson"),
       groupFilesByDay = gfbd,
-      includeMobile = bool("IncludeMobileAppsFields", default = false),
-      useStartTime = bool("UseStartTime", default = false),
+      includeMobile = bool("IncludeMobileAppsFields"),
+      useStartTime = bool("UseStartTime"),
       provider = provider)
     (cfg, warn.result())
   }

@@ -49,22 +49,21 @@ object DerbySql {
 
   /** One ALTER per appended column, as the reference adds them
     * (reference: warehouse/redshift.go:214-238). */
-  def addColumns(table: String, missing: Seq[Field]): Seq[String] =
+  def addColumns(missing: Seq[Field]): Seq[String] =
     missing.map(f =>
-      s"ALTER TABLE ${quote(table)} ADD COLUMN ${quote(f.dbName)} ${ddlType(f.dataType)}")
+      s"ALTER TABLE ${quote(JdbcWarehouse.ExportTable)} ADD COLUMN ${quote(f.dbName)} ${ddlType(f.dataType)}")
 
   /** Anti-duplicate delete for crash recovery
     * (reference: warehouse/redshift.go:284-294), with `>=` where the
     * reference has `>`: see [[Warehouse.removeOrphanedRecords]]. */
-  def deleteOrphans(table: String, syncPoint: Instant): String =
-    s"DELETE FROM ${quote(table)} " +
+  def deleteOrphans(syncPoint: Instant): String =
+    s"DELETE FROM ${quote(JdbcWarehouse.ExportTable)} " +
       s"WHERE ${quote("EventStart")} >= ${timestampLiteral(syncPoint)}"
 
   /** Day-scoped delete: the DELETE-based analog of BigQuery's WriteTruncate
     * for the first bundle of a day (reference: bigquery.go:130-161). */
-  def deleteDayRange(table: String, dayStart: Instant,
-                     dayEnd: Instant): String =
-    s"DELETE FROM ${quote(table)} " +
+  def deleteDayRange(dayStart: Instant, dayEnd: Instant): String =
+    s"DELETE FROM ${quote(JdbcWarehouse.ExportTable)} " +
       s"WHERE ${quote("EventStart")} >= ${timestampLiteral(dayStart)} " +
       s"AND ${quote("EventStart")} < ${timestampLiteral(dayEnd)}"
 

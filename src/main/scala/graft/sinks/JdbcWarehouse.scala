@@ -94,7 +94,7 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String) extends Warehouse {
     ExportSchema.missingFields(live, schema) match {
       case Seq() => ()
       case missing =>
-        DerbySql.addColumns(ExportTable, missing).foreach(exec)
+        DerbySql.addColumns(missing).foreach(exec)
     }
   }
 
@@ -103,7 +103,7 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String) extends Warehouse {
     if (truncateDay) {
       val dayStart = bundleStart.atOffset(ZoneOffset.UTC).toLocalDate
         .atStartOfDay(ZoneOffset.UTC).toInstant
-      exec(DerbySql.deleteDayRange(ExportTable, dayStart,
+      exec(DerbySql.deleteDayRange(dayStart,
         dayStart.plus(java.time.Duration.ofDays(1))))
     }
     val fields = getExportTableFields()
@@ -168,12 +168,12 @@ class JdbcWarehouse(spark: SparkSession, jdbcUrl: String) extends Warehouse {
   override def removeOrphanedRecords(syncPoint: Instant): Unit = {
     val orphaned = maxEventStart().exists(!_.isBefore(syncPoint))
     if (orphaned)
-      exec(DerbySql.deleteOrphans(ExportTable, syncPoint))
+      exec(DerbySql.deleteOrphans(syncPoint))
   }
 }
 
 object JdbcWarehouse {
-  private val ExportTable = "export"
+  private[sinks] val ExportTable = "export"
   private val SyncTable = "sync_table"
 
   // Spark's built-in Derby dialect maps StringType -> CLOB; setNull(CLOB)

@@ -99,7 +99,7 @@ class FanOutSpec extends SparkSpec {
       val b = ((i * 40503L) % 13).toDouble // many ties
       (a, b)
     }.toDF("a", "b")
-    val got = operators.Stats.equiDepthHistogram(df, Seq("a", "b"), 10)
+    val got = operators.Stats.equiDepthHistogram(df, Seq("a", "b"))
       .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
     val qs = (1 until 10).map(i => i.toDouble / 10)
     // reference boundaries through Spark's own round(.,6) so the

@@ -39,7 +39,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("langId picks the profile with most stopword hits") {
     val r = docsDf.select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("lang"))
+        TextAnalysis.langId.as("lang"))
       .collect().map(x => x.getLong(0) -> x.getString(1)).toMap
     assert(r(4L) == "de")
     assert(r(0L) == "en")
@@ -47,7 +47,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("fingerprint is deterministic and order-sensitive") {
     val fps = docsDf.select(col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fp"))
+        TextAnalysis.fingerprint.as("fp"))
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(fps(0L) == fps(3L))   // identical docs
     assert(fps(0L) != fps(1L))   // one word differs
@@ -68,17 +68,17 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("exact dedup groups and drop") {
-    val groups = Dedup.exactDuplicateGroups(docsDf, "doc_id", "text").collect()
+    val groups = Dedup.exactDuplicateGroups(docsDf).collect()
     assert(groups.length == 1)
     assert(groups(0).getAs[Long]("keep_id") == 0L)
     assert(groups(0).getAs[Long]("n_copies") == 2L)
-    assert(Dedup.dropExactDuplicates(docsDf, "doc_id", "text").count() == 4)
+    assert(Dedup.dropExactDuplicates(docsDf).count() == 4)
   }
 
   test("minhash LSH finds the near-dup pair and the exact-dup pair") {
     // bands=16 (one row per band) makes candidate generation deterministic
     // for any pair sharing a single minhash — right for a 5-doc test
-    val pairs = Dedup.minhashLshPairs(docsDf, "doc_id", "text", bands = 16,
+    val pairs = Dedup.minhashLshPairs(docsDf, bands = 16,
         threshold = 0.5, fast = true)
       .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
     assert(pairs.contains((0L, 3L))) // exact dup always collides
@@ -157,7 +157,7 @@ class OperatorsSpec extends SparkSpec {
       (1L, at(90), 3.0, 102L),                       // new session (80m gap)
       (2L, at(5), 4.0, 103L)
     ).toDF("user_id", "ts", "value", "event_id")
-    val sess = Sessionize.sessionSummary(ev, "user_id", "ts", "value", 1800)
+    val sess = Sessionize.sessionSummary(ev)
       .collect()
     val byKey = sess.map(r => (r.getAs[Long]("user_id"),
       r.getAs[Long]("session_seq")) -> r.getAs[Long]("n_events")).toMap
@@ -214,7 +214,7 @@ class OperatorsSpec extends SparkSpec {
       (4L, "completely different content about databases and storage"))
       .toDF("doc_id", "text")
     val pairs = graft.operators.Dedup
-      .simhashNearDupPairs(docs, "doc_id", "text")
+      .simhashNearDupPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 0L))
     // every returned pair respects the threshold
@@ -267,7 +267,7 @@ class OperatorsSpec extends SparkSpec {
       (2L, "p q r s t u v"),
       (3L, "a b c d e f m n")).toDF("doc_id", "text")
     val got = graft.operators.TextAnalysis
-      .spanDedup(docs, "doc_id", "text", n = 3)
+      .spanDedup(docs, n = 3)
       .orderBy("doc_id")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3),
@@ -286,7 +286,7 @@ class OperatorsSpec extends SparkSpec {
       .select(col("vec_id"),
         col("embedding").cast("array<float>").as("embedding"))
     val q = df.select(col("vec_id"),
-      graft.operators.Similarity.quantizeInt8(col("embedding")).as("q"))
+      graft.operators.Similarity.quantizeInt8.as("q"))
       .select(col("vec_id"), col("q.codes"), col("q.scale"))
       .orderBy(col("vec_id")).collect()
     assert(q(0).getSeq[Int](1) == Seq(127, -63, 32)) // floor(x/s + .5)
@@ -300,8 +300,8 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq("mail a.b+c@test.org or 192.168.0.1 ssn 123-45-6789 end")
       .toDF("text")
     val r = df.select(
-      graft.operators.TextAnalysis.redactPii(col("text")).as("red"),
-      graft.operators.TextAnalysis.piiCounts(col("text")).as("c"))
+      graft.operators.TextAnalysis.redactPii.as("red"),
+      graft.operators.TextAnalysis.piiCounts.as("c"))
       .collect()(0)
     assert(r.getString(0) == "mail <EMAIL> or <IP> ssn <SSN> end")
     val c = r.getStruct(1)
@@ -347,20 +347,20 @@ class OperatorsSpec extends SparkSpec {
     def recall(df: org.apache.spark.sql.DataFrame): Double =
       df.select("query_id", "neighbor_id").intersect(gt).count() / gtN
 
-    val single = recall(Similarity.lshTopK(emb, queries, k = 5))
-    val multi = recall(Similarity.lshTopK(emb, queries, k = 5,
+    val single = recall(Similarity.lshTopK(emb, queries))
+    val multi = recall(Similarity.lshTopK(emb, queries,
       probeBits = 1))
     assert(multi >= single, s"multi-probe $multi < single-probe $single")
     assert(multi >= 0.70, s"multi-probe recall@5 $multi below target")
 
     val seeds = emb.filter(col("vec_id") % 20 === 0) // near-center seeds
-    val n1 = recall(Similarity.ivfTopK(emb, queries, seeds, k = 5))
-    val n3 = recall(Similarity.ivfTopK(emb, queries, seeds, k = 5,
+    val n1 = recall(Similarity.ivfTopK(emb, queries, seeds))
+    val n3 = recall(Similarity.ivfTopK(emb, queries, seeds,
       nprobe = 3))
     assert(n3 >= n1, s"nprobe=3 $n3 < nprobe=1 $n1")
     assert(n3 >= 0.80, s"nprobe=3 recall@5 $n3 below target")
     // nprobe multiplies probed cells, never duplicates a candidate pair
-    val dup = Similarity.ivfTopK(emb, queries, seeds, k = 5, nprobe = 3)
+    val dup = Similarity.ivfTopK(emb, queries, seeds, nprobe = 3)
       .groupBy("query_id", "neighbor_id").count()
       .filter(col("count") > 1).count()
     assert(dup == 0)
@@ -447,7 +447,7 @@ class OperatorsSpec extends SparkSpec {
     import s.implicits._
     val docs = Seq((0L, "a a b"), (1L, "b c")).toDF("doc_id", "text")
     // corpus: N=5, count(a)=2, count(b)=2, count(c)=1
-    val got = TextAnalysis.unigramSurprisal(docs, "doc_id", "text")
+    val got = TextAnalysis.unigramSurprisal(docs)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     def r6(x: Double) = BigDecimal(x)
@@ -461,7 +461,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got == Seq((0L, 3L, s0), (1L, 2L, s1)))
     assert(s1 > s0) // the doc with the rare token is more surprising
     // empty corpus -> empty result, schema intact
-    val empty = TextAnalysis.unigramSurprisal(docs.limit(0), "doc_id", "text")
+    val empty = TextAnalysis.unigramSurprisal(docs.limit(0))
     assert(empty.collect().isEmpty &&
       empty.columns.toSeq == Seq("doc_id", "n_tokens", "surprisal"))
   }
@@ -476,7 +476,7 @@ class OperatorsSpec extends SparkSpec {
     val scoreCol = element_at(
       typedlit(scores.map { case (k, v) => (k.toString, v) }),
       col("doc_id").cast("string"))
-    val got = Dedup.keepBest(docsDf, pairs, "doc_id", scoreCol)
+    val got = Dedup.keepBest(docsDf, pairs, scoreCol)
       .orderBy("cluster_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSeq
@@ -485,7 +485,7 @@ class OperatorsSpec extends SparkSpec {
       (2L, 2L, 1L, 0.1),   // singletons keep themselves
       (4L, 4L, 1L, 0.7)))
     // tie-break: equal scores keep the lowest id
-    val flat = Dedup.keepBest(docsDf, pairs, "doc_id", lit(1.0))
+    val flat = Dedup.keepBest(docsDf, pairs, lit(1.0))
       .orderBy("cluster_id").collect()
     assert(flat.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((0L, 0L), (2L, 2L), (4L, 4L)))
@@ -502,7 +502,7 @@ class OperatorsSpec extends SparkSpec {
     val df = rows.toDF("doc_id", "lang")
     val n = 5
     val got = graft.operators.Sampling
-      .stratifiedSample(df, "lang", "doc_id", n)
+      .stratifiedSample(df, n)
       .select("lang", "doc_id", "rk").orderBy("lang", "rk").collect().toSeq
     val h = substring(md5(col("doc_id").cast("string")), 1, 8)
     val naive = df.withColumn("rk", row_number().over(
@@ -517,7 +517,7 @@ class OperatorsSpec extends SparkSpec {
     // leaves groups short about half the time — whichever path runs, the
     // sufficiency fallback must keep the result identical
     val tight = graft.operators.Sampling
-      .stratifiedSample(df, "lang", "doc_id", n, margin = 1.0)
+      .stratifiedSample(df, n, margin = 1.0)
       .select("lang", "doc_id", "rk").orderBy("lang", "rk").collect().toSeq
     assert(tight == naive)
     // a null group is a group like any other (an equi-join would drop it)
@@ -525,7 +525,7 @@ class OperatorsSpec extends SparkSpec {
       (300 until 310).map(i => (i.toLong, null.asInstanceOf[String]))
         .toDF("doc_id", "lang"))
     val gotNull = graft.operators.Sampling
-      .stratifiedSample(withNull, "lang", "doc_id", n, margin = 1.0)
+      .stratifiedSample(withNull, n, margin = 1.0)
     assert(gotNull.filter(col("lang").isNull).count() == n)
     assert(gotNull.count() == naive.size + n)
   }
@@ -547,7 +547,7 @@ class OperatorsSpec extends SparkSpec {
     val df = highIds.map(id => (id, "hi"))
       .toDF("doc_id", "lang")
     val got = graft.operators.Sampling
-      .stratifiedSample(df, "lang", "doc_id", 1, margin = 1.0)
+      .stratifiedSample(df, 1, margin = 1.0)
       .select("doc_id").collect()
     val want = highIds.minBy(id => (h8(id), id))
     assert(got.length == 1 && got(0).getLong(0) == want)
@@ -564,10 +564,10 @@ class OperatorsSpec extends SparkSpec {
       ("deadbeefdeadbeef", "DEADBEEFDEADBEEF"), // non-hex (upper) -> -1
       ("z" * 16, hex(16)),              // all non-hex
       ("", ""))                         // both empty
-    val df = rows.toDF("a", "b")
+    val df = rows.toDF("a_sig", "b_sig")
     val diff = df.select(
-        Dedup.hammingHexStr(col("a"), col("b")).as("native"),
-        Dedup.hammingHexStrHof(col("a"), col("b")).as("hof"))
+        Dedup.hammingHexStr.as("native"),
+        Dedup.hammingHexStrHof(col("a_sig"), col("b_sig")).as("hof"))
       .filter(col("native") =!= col("hof") ||
         col("native").isNull =!= col("hof").isNull)
     assert(diff.count() == 0)
@@ -587,13 +587,13 @@ class OperatorsSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Double]("sim"))).toSet
     val th = 0.1
-    val full = toSet(Dedup.minhashLshPairs(docs, "doc_id", "text",
+    val full = toSet(Dedup.minhashLshPairs(docs,
       threshold = th))
-    val oldOnly = toSet(Dedup.minhashLshPairs(old, "doc_id", "text",
+    val oldOnly = toSet(Dedup.minhashLshPairs(old,
       threshold = th))
     val incr = toSet(Dedup.minhashLshPairsIncremental(
-      Dedup.minhashIndex(neu, "doc_id", "text"),
-      Dedup.minhashIndex(old, "doc_id", "text"), threshold = th))
+      Dedup.minhashIndex(neu),
+      Dedup.minhashIndex(old), threshold = th))
     assert(full.nonEmpty && incr.nonEmpty)
     assert(incr.forall { case (a, b, _) => a % 2 == 1 || b % 2 == 1 })
     assert((oldOnly & incr).isEmpty)
@@ -613,8 +613,8 @@ class OperatorsSpec extends SparkSpec {
     val right = Seq((10L, a), (11L, a + " extra"), (12L, "unrelated entirely"))
       .toDF("doc_id", "text")
     val out = Dedup.fuzzyJoin(
-        Dedup.minhashIndex(left, "doc_id", "text"),
-        Dedup.minhashIndex(right, "doc_id", "text"), threshold = 0.5)
+        Dedup.minhashIndex(left),
+        Dedup.minhashIndex(right), threshold = 0.5)
       .collect()
       .map(r => (r.getAs[Long]("left_id"), r.getAs[Long]("right_id"),
         r.getAs[Double]("sim")))
@@ -656,13 +656,13 @@ class OperatorsSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"))).toMap
     val th = 0.3
     val full = toMap(Dedup.nearDupClusters(
-      Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = th)))
+      Dedup.minhashLshPairs(docs, threshold = th)))
     val labels = Dedup.nearDupClusters(
-      Dedup.minhashLshPairs(evens, "doc_id", "text", threshold = th))
+      Dedup.minhashLshPairs(evens, threshold = th))
     val incr = toMap(Dedup.nearDupClustersIncremental(labels,
       Dedup.minhashLshPairsIncremental(
-        Dedup.minhashIndex(odds, "doc_id", "text"),
-        Dedup.minhashIndex(evens, "doc_id", "text"), threshold = th)))
+        Dedup.minhashIndex(odds),
+        Dedup.minhashIndex(evens), threshold = th)))
     assert(full.nonEmpty && incr == full)
   }
 
@@ -695,7 +695,7 @@ class OperatorsSpec extends SparkSpec {
       (2L, "hot hot hot hot hot warm warm warm c d"))
       .toDF("doc_id", "text")
     val out = graft.operators.TextAnalysis
-      .heavyHitters(docs, "text", minShare = 0.25)
+      .heavyHitters(docs, minShare = 0.25)
       .collect().map(r => (r.getString(0), r.getLong(1),
         r.getBoolean(2), r.getBoolean(3))).sortBy(_._1)
     assert(out.map(t => (t._1, t._2)).toSeq ==
@@ -714,20 +714,19 @@ class OperatorsSpec extends SparkSpec {
     val neu = docs.filter(col("doc_id") % 2 === 1)
     val tmp = java.nio.file.Files.createTempDirectory("graft_idx").toString
     graft.operators.Materializer.Persisted(tmp)(
-      Dedup.minhashIndex(old, "doc_id", "text", fast = true))
+      Dedup.minhashIndex(old, fast = true))
     def toSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Double]("sim"))).toSet
     val inMem = toSet(Dedup.minhashLshPairsIncremental(
-      Dedup.minhashIndex(neu, "doc_id", "text", fast = true),
-      Dedup.minhashIndex(old, "doc_id", "text", fast = true),
+      Dedup.minhashIndex(neu, fast = true),
+      Dedup.minhashIndex(old, fast = true),
       threshold = 0.1))
     // fresh session state: separate registry/catalog/conf, same cluster
     val s2 = spark.newSession()
     val docs2 = s2.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val fromDisk = toSet(Dedup.minhashLshPairsIncremental(
-      Dedup.minhashIndex(docs2.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text", fast = true),
+      Dedup.minhashIndex(docs2.filter(col("doc_id") % 2 === 1), fast = true),
       s2.read.parquet(s"$tmp/mat_0"), threshold = 0.1))
     assert(fromDisk.nonEmpty && fromDisk == inMem)
   }
@@ -869,11 +868,11 @@ class OperatorsSpec extends SparkSpec {
     // after both merges no pairs remain, so training stops at 2 even when
     // asked for 3
     val docs = Seq("aa ab aa", "aa b").toDF("text")
-    assert(graft.operators.Bpe.train(docs, "text", nMerges = 3) ==
+    assert(graft.operators.Bpe.train(docs, nMerges = 3) ==
       Seq(("a", "a"), ("a", "b")))
     // exact tie on counts -> lexicographic (left, right) ascending wins
     val tied = Seq("ab cd ab cd").toDF("text")
-    assert(graft.operators.Bpe.train(tied, "text", nMerges = 1) ==
+    assert(graft.operators.Bpe.train(tied, nMerges = 1) ==
       Seq(("a", "b")))
   }
 
@@ -881,7 +880,7 @@ class OperatorsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val merges = graft.operators.Bpe.train(docs, "text", nMerges = 30)
+    val merges = graft.operators.Bpe.train(docs, nMerges = 30)
     assert(merges.size == 30)
     val enc = docs.select(col("text"),
       graft.operators.Bpe.encode(col("text"), merges).as("sub"))
@@ -922,7 +921,7 @@ class OperatorsSpec extends SparkSpec {
     // docs 0, 1, 3 share the longA/longB spine: every 3-gram common to
     // all three has df >= 3 and is boilerplate at minDf = 3; doc 2 shares
     // nothing. The exact dup pair (0, 3) must report identical stats.
-    val got = TextAnalysis.boilerplateStats(docsDf, "doc_id", "text", minDf = 3)
+    val got = TextAnalysis.boilerplateStats(docsDf, minDf = 3)
       .orderBy("doc_id").collect()
     assert(got.length == 5)
     val byId = got.map(r => r.getLong(0) ->
@@ -943,7 +942,7 @@ class OperatorsSpec extends SparkSpec {
       (0L, "apple apple banana"),
       (1L, "banana cherry"),
       (2L, "apple date date date")).toDF("doc_id", "text")
-    val got = TextAnalysis.tfidfTopTerms(docs, "doc_id", "text", topN = 2)
+    val got = TextAnalysis.tfidfTopTerms(docs, topN = 2)
       .orderBy("doc_id", "rk")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getDouble(4), r.getInt(5)))
@@ -957,7 +956,7 @@ class OperatorsSpec extends SparkSpec {
       (2L, "date", 3L, 1L, r6(3 * ln(3.0)), 1),
       (2L, "apple", 1L, 2L, r6(ln(3.0 / 2)), 2)))
     // empty corpus -> empty result, schema intact
-    val empty = TextAnalysis.tfidfTopTerms(docs.limit(0), "doc_id", "text")
+    val empty = TextAnalysis.tfidfTopTerms(docs.limit(0))
     assert(empty.collect().isEmpty &&
       empty.columns.toSeq == Seq("doc_id", "term", "tf", "df", "tfidf", "rk"))
   }
@@ -978,7 +977,7 @@ class OperatorsSpec extends SparkSpec {
         expr("(cum - n_tokens) div 512L").as("pack_id"))
       .orderBy("id").collect().toSeq
     for (buckets <- Seq(1, 7, 64)) {
-      val got = TextAnalysis.packSequences(docs, "doc_id", "text",
+      val got = TextAnalysis.packSequences(docs,
           seqLen = 512, nBuckets = buckets)
         .orderBy("id").collect().toSeq
       assert(got == naive, s"nBuckets=$buckets")
@@ -1005,7 +1004,7 @@ class OperatorsSpec extends SparkSpec {
         expr("(cum - n_tokens) div 16L").as("pack_id"))
       .orderBy("id").collect().toSeq
     for (buckets <- Seq(1, 5, 64, 1024)) {
-      val got = TextAnalysis.packSequences(df, "doc_id", "text",
+      val got = TextAnalysis.packSequences(df,
           seqLen = 16, nBuckets = buckets)
         .orderBy("id").collect().toSeq
       assert(got == naive, s"nBuckets=$buckets")
@@ -1026,7 +1025,7 @@ class OperatorsSpec extends SparkSpec {
       .distinct
     val df = ids.map(id => (id, "w w w")).toDF("doc_id", "text")
     val nBuckets = 16
-    val (n, bounds) = TextAnalysis.packBounds(df, "doc_id", nBuckets)
+    val (n, bounds) = TextAnalysis.packBounds(df, nBuckets)
     assert(n == ids.length)
     // local replica of the row->bucket rule: #boundaries at or below id
     val sizes = ids.groupBy(id => bounds.count(id >= _)).values.map(_.size)
@@ -1044,7 +1043,7 @@ class OperatorsSpec extends SparkSpec {
       .select(col("id"), col("n_tokens"),
         expr("(cum - n_tokens) div 16L").as("pack_id"))
       .orderBy("id").collect().toSeq
-    val got = TextAnalysis.packSequences(df, "doc_id", "text",
+    val got = TextAnalysis.packSequences(df,
         seqLen = 16, nBuckets = nBuckets)
       .orderBy("id").collect().toSeq
     assert(got == naive)
@@ -1143,11 +1142,11 @@ class OperatorsSpec extends SparkSpec {
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def at(min: Long) = new java.sql.Timestamp(base.getTime + min * 60000)
     val trades = Seq((1L, at(10), "t1"), (1L, at(30), "t2"), (2L, at(5), "t3"))
-      .toDF("k", "ts", "trade")
+      .toDF("user_id", "ts", "trade")
     val quotes = Seq((1L, at(10), 100.0), (1L, at(20), 200.0),
-      (2L, at(9), 300.0)).toDF("k", "ts", "px")
+      (2L, at(9), 300.0)).toDF("user_id", "ts", "px")
     val out = graft.operators.AsOfJoin
-      .asofJoin(trades, quotes, "k", "ts", "ts", Seq("px"))
+      .asofJoin(trades, quotes, "ts", "ts", Seq("px"))
       .collect().map(r => r.getAs[String]("trade") ->
         Option(r.getAs[Any]("px"))).toMap
     assert(out("t1").contains(100.0))  // equal ts matches (<=)
@@ -1160,12 +1159,14 @@ class OperatorsSpec extends SparkSpec {
     import s.implicits._
     // skewed fact: 90% of rows on key 1
     val fact = ((1 to 90).map(i => (1L, i)) ++ (1 to 10).map(i => (2L, i)))
-      .toDF("k", "v")
-    val dim = Seq((1L, "hot"), (2L, "cold"), (3L, "unused")).toDF("k", "name")
-    val plain = fact.join(dim, Seq("k")).select("k", "v", "name")
+      .toDF("user_id", "v")
+    val dim = Seq((1L, "hot"), (2L, "cold"), (3L, "unused"))
+      .toDF("user_id", "name")
+    val plain = fact.join(dim, Seq("user_id")).select("user_id", "v", "name")
       .collect().map(_.toSeq).sortBy(_.toString)
-    val salted = graft.operators.Skew.saltedJoin(fact, dim, "k")
-      .select("k", "v", "name").collect().map(_.toSeq).sortBy(_.toString)
+    val salted = graft.operators.Skew.saltedJoin(fact, dim)
+      .select("user_id", "v", "name").collect().map(_.toSeq)
+      .sortBy(_.toString)
     assert(salted.toSeq == plain.toSeq)
   }
 
@@ -1214,7 +1215,7 @@ class OperatorsSpec extends SparkSpec {
         "not an avi at all".getBytes("UTF-8")),
       // a RIFF header with a truncated body must not crash the walk
       Multimodal.MediaRow(13L, "video",
-        "RIFF   AVI ".getBytes("ISO-8859-1")))
+        "RIFF\u0004\u0000\u0000\u0000AVI ".getBytes("ISO-8859-1")))
       .toDS()
     val out = Multimodal.extractFeatures(media).collect()
     assert(out.forall(f => !f.decoded && f.channels == 0))
@@ -1288,7 +1289,7 @@ class OperatorsSpec extends SparkSpec {
       (12L, Seq(1.0f, 0.0f, 0.0f)),  // dup of 10 and 11
       (13L, Seq(0.0f, 1.0f, 0.0f))   // orthogonal: survives any bucket
     ).toDF("vec_id", "embedding")
-    val drops = Dedup.semanticDedupDrops(embs, "vec_id", "embedding",
+    val drops = Dedup.semanticDedupDrops(embs,
         planes = 4, threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(drops == Set((11L, 10L, 1L), (12L, 10L, 2L)))
@@ -1302,7 +1303,7 @@ class OperatorsSpec extends SparkSpec {
       (1L, "a b"),                           // shorter than one window
       (2L, "   ")                            // no tokens -> no chunks
     ).toDF("doc_id", "text")
-    val r = TextAnalysis.chunkDocuments(docs, "doc_id", "text",
+    val r = TextAnalysis.chunkDocuments(docs,
         chunkLen = 4, stride = 3)
       .orderBy("doc_id", "chunk_id").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getString(3)))
@@ -1323,7 +1324,7 @@ class OperatorsSpec extends SparkSpec {
       (i, (0 until n).map(j => s"w$j").mkString(" "))
     }.toDF("doc_id", "text")
     val (cl, st) = (16, 12)
-    val out = TextAnalysis.chunkDocuments(docs, "doc_id", "text", cl, st)
+    val out = TextAnalysis.chunkDocuments(docs, cl, st)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getString(3))).groupBy(_._1)
     for ((i, n) <- lens) {
@@ -1352,7 +1353,7 @@ class OperatorsSpec extends SparkSpec {
     import s.implicits._
     val docs = Seq((0L, "a b", "x")).toDF("doc_id", "text", "source")
     val r = graft.operators.Sampling.dsirResample(docs,
-      docs.filter(col("source") === "nope"), "doc_id", "text", n = 5)
+      docs.filter(col("source") === "nope"), n = 5)
     assert(r.collect().isEmpty &&
       r.columns.toSeq == Seq("rk", "id", "logw", "score"))
   }
@@ -1364,7 +1365,7 @@ class OperatorsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // bigrams: doc0 (a,b)x2 (b,a)x1; doc1 (a,b)x1. c2(a,b)=3, c2(b,a)=1;
     // c1(a)=3, c1(b)=1; V = |{a,b,z}| = 3, alpha = 0.5
-    val got = TextAnalysis.bigramSurprisal(docs, "doc_id", "text")
+    val got = TextAnalysis.bigramSurprisal(docs)
       .orderBy("doc_id").collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSeq
     def r6(x: Double) = BigDecimal(x)
@@ -1388,7 +1389,7 @@ class OperatorsSpec extends SparkSpec {
     }.toDF("doc_id", "text", "source")
     val target = docs.filter(col("source") === "tgt")
     def run() = graft.operators.Sampling
-      .dsirResample(docs, target, "doc_id", "text", n = 10)
+      .dsirResample(docs, target, n = 10)
     val r1 = run().collect().map(x =>
       (x.getInt(0), x.getLong(1), x.getDouble(2), x.getDouble(3))).toSeq
     assert(r1.size == 10 && r1.map(_._1) == (1 to 10))
@@ -1397,7 +1398,7 @@ class OperatorsSpec extends SparkSpec {
     // importance weights: every alpha-doc (target-like) outweighs every
     // gamma-doc — check via a full-corpus selection (n = 40)
     val all = graft.operators.Sampling
-      .dsirResample(docs, target, "doc_id", "text", n = 40)
+      .dsirResample(docs, target, n = 40)
       .collect().map(x => x.getLong(1) -> x.getDouble(2)).toMap
     val evenMin = (0L until 40L by 2).map(all).min
     val oddMax = (1L until 40L by 2).map(all).max
@@ -1436,8 +1437,7 @@ class OperatorsSpec extends SparkSpec {
       (12L, Seq(0.0f, 1.0f))
     ).toDF("vec_id", "embedding")
     val evalSet = embs.filter(col("vec_id") < 2)
-    val r = Dedup.semanticContamination(embs, evalSet, "vec_id",
-        "embedding", threshold = 0.95)
+    val r = Dedup.semanticContamination(embs, evalSet, threshold = 0.95)
       .filter(col("id") >= 10)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         x.getDouble(3))).toSet
@@ -1466,7 +1466,7 @@ class OperatorsSpec extends SparkSpec {
     def bucket(t: String) = (BigInt(md5hex(t).take(8), 16) % dim).toInt
     val toks = Seq("alpha", "beta", "alpha", "gamma")
     val df = Seq((7L, toks)).toDF("vec_id", "toks")
-    val got = Similarity.hashEmbeddings(df, "vec_id", "toks", dim)
+    val got = Similarity.hashEmbeddings(df, dim)
       .collect()(0)
     assert(got.getLong(0) == 7L)
     val expected = Array.fill(dim)(0f)
@@ -1474,8 +1474,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got.getSeq[Float](1).toArray.sameElements(expected))
     // empty-token rows have no content to embed and are dropped
     val empty = Similarity.hashEmbeddings(
-      Seq((1L, Seq.empty[String])).toDF("vec_id", "toks"),
-      "vec_id", "toks", dim)
+      Seq((1L, Seq.empty[String])).toDF("vec_id", "toks"), dim)
     assert(empty.collect().isEmpty)
   }
 
@@ -1489,11 +1488,11 @@ class OperatorsSpec extends SparkSpec {
       val txt = if (i % 2 == 0) ("word " * 120).trim else "tiny text"
       (i, txt, i % 2 == 0)
     }.toDF("doc_id", "text", "y")
-    def train() = QualityClassifier.trainLogReg(docs, "text",
-      col("y").cast("double"), iters = 16, eta = 8.0)
+    def train() = QualityClassifier.trainLogReg(docs,
+      col("y").cast("double"), iters = 16)
     val w = train()
     assert(w.sameElements(train())) // bit-identical retrain
-    val scored = QualityClassifier.score(docs, "doc_id", "text", w,
+    val scored = QualityClassifier.score(docs, w,
         extra = Seq(col("y")))
       .collect().map(r => (r.getBoolean(r.fieldIndex("pred")),
         r.getBoolean(r.fieldIndex("y"))))
@@ -1507,14 +1506,13 @@ class OperatorsSpec extends SparkSpec {
       df.orderBy("id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val exact = rows(TextAnalysis
-      .contaminationOverlap(docs, ev, "doc_id", "text", n = 5))
+      .contaminationOverlap(docs, ev))
     val bloom = rows(TextAnalysis
-      .contaminationOverlapBloom(docs, ev, "doc_id", "text", n = 5))
+      .contaminationOverlapBloom(docs, ev))
     assert(exact.nonEmpty && exact == bloom)
     // empty eval set: both paths agree on the empty result
     val none = docs.filter(col("doc_id") < 0)
-    assert(TextAnalysis.contaminationOverlapBloom(docs, none,
-      "doc_id", "text", n = 5).collect().isEmpty)
+    assert(TextAnalysis.contaminationOverlapBloom(docs, none).collect().isEmpty)
   }
 
   test("asofJoin rightTieBreak picks max id among equal-ts right rows") {
@@ -1530,8 +1528,7 @@ class OperatorsSpec extends SparkSpec {
       .toDF("user_id", "ts", "touch_type", "event_id")
       .select(col("user_id"), col("ts"), col("touch_type"), col("event_id"))
     val got = graft.operators.AsOfJoin.asofJoin(
-        left, right.select("user_id", "ts", "touch_type", "event_id"),
-        "user_id", "ts", "ts", Seq("touch_type"),
+        left, right.select("user_id", "ts", "touch_type", "event_id"), "ts", "ts", Seq("touch_type"),
         rightTieBreak = Some("event_id"))
       .orderBy("user_id")
       .collect().map(r => (r.getLong(0), Option(r.getString(3)))).toSeq
@@ -1549,7 +1546,7 @@ class OperatorsSpec extends SparkSpec {
       assert(back.select("doc_id").distinct().count() == docs.count())
       // manifest rows describe exactly the written directories
       val stats = graft.operators.Sharding
-        .shardStats(docs, "doc_id", 16, "n_chars", "source")
+        .shardStats(docs)
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       val perDir = back.groupBy("shard").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -1576,21 +1573,21 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq(
       ("a", 1L, 0.9), ("a", 2L, 0.5), ("a", 3L, 0.9), ("a", 4L, 0.1),
       ("b", 9L, 0.2)
-    ).toDF("src", "id", "q")
+    ).toDF("source", "doc_id", "q")
     val got = graft.operators.Sampling
-      .cappedByScore(df, "src", "id", col("q"), n = 2)
-      .orderBy("src", "rk")
+      .cappedByScore(df, col("q"), n = 2)
+      .orderBy("source", "rk")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(3))).toSeq
     assert(got == Seq(("a", 1L, 1), ("a", 3L, 2), ("b", 9L, 1)))
     // differential vs the naive window on the real corpus
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val capped = graft.operators.Sampling.cappedByScore(
-      docs, "source", "doc_id", TextAnalysis.qualityScore(col("text")), 50)
+      docs, TextAnalysis.qualityScore, 50)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("source")
       .orderBy(col("q").desc, col("doc_id").asc)
     val naive = docs
       .select(col("source"), col("doc_id"),
-        TextAnalysis.qualityScore(col("text")).as("q"))
+        TextAnalysis.qualityScore.as("q"))
       .withColumn("rk", row_number().over(w)).filter(col("rk") <= 50)
     def keys(df: org.apache.spark.sql.DataFrame) =
       df.select("source", "doc_id", "rk").collect()
@@ -1605,7 +1602,7 @@ class OperatorsSpec extends SparkSpec {
       (0L, longA), (1L, longA),              // identical -> all chunks dup
       (2L, longB), (3L, ""), (4L, "abc")     // empty + shorter-than-window
     ).toDF("doc_id", "text")
-    val ch = TextAnalysis.cdcChunks(df, "doc_id", "text")
+    val ch = TextAnalysis.cdcChunks(df)
       .orderBy("id", "chunk_id").collect()
     val texts = Map(0L -> longA, 1L -> longA, 2L -> longB, 3L -> "", 4L -> "abc")
     // per doc: chunks start at 1, abut (start+len = next start), cover len
@@ -1650,7 +1647,7 @@ class OperatorsSpec extends SparkSpec {
       // mean-len 183 < 3*65 fail; stopword/alpha/word-count pass
       13L -> (Seq.fill(58)("the").mkString(" ") + " # # # # # # ...")
     ).toDF("doc_id", "text")
-    val rows = TextAnalysis.gopherRules(docs, "doc_id", "text")
+    val rows = TextAnalysis.gopherRules(docs)
       .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getBoolean(7)))).toMap
@@ -1710,7 +1707,7 @@ class OperatorsSpec extends SparkSpec {
     // formula: real WAV decode + envHashHex must recover it exactly
     for (id <- Seq(0L, 1L, 26L, 51L, 77L)) {
       val env = Multimodal.decodeEnvelope(
-        Multimodal.envelopeWavFor(id, 25L), 65).get
+        Multimodal.envelopeWavFor(id, 25L)).get
       val bits = Multimodal.fixtureDHashBits(id, 25L)
       val expect = (0 until 16).map { c =>
         val nib = (0 until 4).map(t => bits(4 * c + t) << (3 - t)).sum
@@ -1777,7 +1774,7 @@ class OperatorsSpec extends SparkSpec {
     import graft.operators.SnapshotDiff
     val oldSnap = Seq(1L -> "a", 2L -> "b", 3L -> "c").toDF("doc_id", "text")
     val newSnap = Seq(2L -> "b", 3L -> "cX", 4L -> "d").toDF("doc_id", "text")
-    val got = SnapshotDiff.diff(oldSnap, newSnap, "doc_id", "text")
+    val got = SnapshotDiff.diff(oldSnap, newSnap)
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), r.isNullAt(2), r.isNullAt(3)))).toMap
     assert(got(1L) == (("removed", false, true)))
@@ -1793,7 +1790,7 @@ class OperatorsSpec extends SparkSpec {
     // slice A: "x x y" (3 tokens), slice B: "x z" (2); union vocab 3.
     // pa(x)=3/6, pb(x)=2/5; pa(y)=2/6, pb(y)=1/5; pa(z)=1/6, pb(z)=2/5
     val docs = Seq(("a", "x x y"), ("b", "x z")).toDF("source", "text")
-    val got = TextAnalysis.tokenDrift(docs, "text",
+    val got = TextAnalysis.tokenDrift(docs,
         col("source") === "a", minCount = 1L)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
@@ -1814,7 +1811,7 @@ class OperatorsSpec extends SparkSpec {
     val emb = Seq(
       (10L, Seq(1.0f, 2.0f, 7.0f)),
       (11L, Seq(3.0f, 4.0f, 7.0f))).toDF("vec_id", "embedding")
-    val z = Similarity.whiten(emb, "vec_id", "embedding")
+    val z = Similarity.whiten(emb)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
     assert(z((10L, 1L)) == -1.0 && z((11L, 1L)) == 1.0)
@@ -1828,15 +1825,15 @@ class OperatorsSpec extends SparkSpec {
     import graft.operators.Overlap
     // A shingles {a b c, b c d}; B shingles {a b c, b c x}:
     // union 3, intersection 1 -> exact Jaccard 1/3 once k >= 3
-    val docs = Seq(("A", "a b c d"), ("B", "a b c x")).toDF("slice", "text")
-    val r = Overlap.sliceOverlap(docs, "slice", "text", shingleN = 3, k = 8)
+    val docs = Seq(("A", "a b c d"), ("B", "a b c x")).toDF("lang", "text")
+    val r = Overlap.sliceOverlap(docs, k = 8)
       .collect()
     assert(r.length == 1)
     assert(r(0).getString(0) == "A" && r(0).getString(1) == "B")
     assert(r(0).getLong(2) == 3L && r(0).getLong(3) == 1L)
     assert(r(0).getDouble(4) == 0.333333)
     // k=1 truncates the merged sketch to one hash
-    val r1 = Overlap.sliceOverlap(docs, "slice", "text", 3, 1).collect()(0)
+    val r1 = Overlap.sliceOverlap(docs, 1).collect()(0)
     assert(r1.getLong(2) == 1L)
   }
 
@@ -1859,7 +1856,7 @@ class OperatorsSpec extends SparkSpec {
     // c(a,b)=2, c(b,a)=2, marginals all 2, N=4:
     // pmi = ln(2*4 / (2*2)) = ln 2 for both
     val docs = Seq("a b a b", "b a").toDF("text")
-    val got = TextAnalysis.pmiCollocations(docs, "text", minCount = 1L)
+    val got = TextAnalysis.pmiCollocations(docs, minCount = 1L)
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))).toMap
     val ln2 = BigDecimal(math.log(2.0))
@@ -1867,7 +1864,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got(("a", "b")) == ((2L, 2L, 2L, ln2)))
     assert(got(("b", "a")) == ((2L, 2L, 2L, ln2)))
     // the integer gate drops below-threshold bigrams entirely
-    assert(TextAnalysis.pmiCollocations(docs, "text", 3L).count() == 0)
+    assert(TextAnalysis.pmiCollocations(docs, 3L).count() == 0)
   }
 
   test("HLL sketch union: merged per-batch sketches answer exactly at small n") {
@@ -1900,7 +1897,7 @@ class OperatorsSpec extends SparkSpec {
     // locality: fixing the top 4 z-bits (16 shards over 8-bit dims)
     // pins each dim to a 64-cell span inside every shard
     val xs = (0 until 256 by 3).map(i => (i, (i * 7) % 24))
-    val stats = Layout.zorderShardStats(xs.toDF("x", "y"), "x", "y", 8, 16)
+    val stats = Layout.zorderShardStats(xs.toDF("ub", "hb"))
       .collect()
     assert(stats.nonEmpty)
     stats.foreach { r =>
@@ -1942,10 +1939,10 @@ class OperatorsSpec extends SparkSpec {
       "<style type=\"text/css\">body{x:1}</style></head>" +
       "<body><nav>menu</nav><p>first para</p><script>var hidden=1;" +
       "</script><p>second\npara</p></body></html>"
-    val r = Seq(html).toDF("h").select(
-      TextAnalysis.htmlTitle(col("h")).as("t"),
-      TextAnalysis.htmlParagraphs(col("h")).as("m"),
-      TextAnalysis.stripHtml(col("h")).as("f")).collect()(0)
+    val r = Seq(html).toDF("html").select(
+      TextAnalysis.htmlTitle.as("t"),
+      TextAnalysis.htmlParagraphs.as("m"),
+      TextAnalysis.stripHtml.as("f")).collect()(0)
     assert(r.getString(0) == "My Page")
     // both <p> blocks, in order, internal newline preserved
     assert(r.getString(1) == "first para second\npara")
@@ -1959,8 +1956,8 @@ class OperatorsSpec extends SparkSpec {
     import s.implicits._
     val df = Seq(
       ("a", 1L, 10.0), ("a", 2L, 30.0), ("a", 3L, 30.0), ("a", 4L, 5.0),
-      ("b", 5L, 1.0)).toDF("g", "id", "v")
-    val got = graft.operators.TopK.groupTopK(df, "g", col("v"), "id", 2)
+      ("b", 5L, 1.0)).toDF("g", "doc_id", "v")
+    val got = graft.operators.TopK.groupTopK(df, "g", col("v"), 2)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(3)))
       .sortBy(t => (t._1, t._3)).toSeq
     // a: 30.0 tie between ids 2,3 -> id asc wins rank 1; b keeps its
@@ -1975,7 +1972,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq((1L, "x x y"), (2L, "x z"), (3L, "z"))
       .toDF("doc_id", "text")
     val got = graft.operators.Retrieval
-      .bm25(df, "doc_id", "text", Seq("x", "y"),
+      .bm25(df, Seq("x", "y"),
         topN = 3)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
         r.getDouble(3))).toSeq
@@ -2000,7 +1997,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq((1L, "the alpha beta"), (2L, "the alpha beta"),
       (3L, "the alpha gamma"), (4L, "the delta")).toDF("doc_id", "text")
     val got = graft.operators.Retrieval
-      .sparseCosinePairs(df, "doc_id", "text", maxDf = 3L, threshold = 0.4)
+      .sparseCosinePairs(df, maxDf = 3L, threshold = 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
     // (1,2): both vectors (alpha,beta)/sqrt2 -> sim 1.0, 2 shared terms
@@ -2040,7 +2037,7 @@ class OperatorsSpec extends SparkSpec {
       (6L, "zzzzzz")   // unrelated
     ).toDF("id", "str")
     val got = graft.operators.EditJoin
-      .editDistancePairs(df, "id", "str")
+      .editDistancePairs(df)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       .sortBy(t => (t._1, t._2)).toSeq
     // (2,3)/(2,4)/(3,4) differ by 2 edits; only the base pairs survive
@@ -2078,7 +2075,7 @@ class OperatorsSpec extends SparkSpec {
       if ai < bi && lev(as, bs) <= 1
     } yield (ai, bi)).toSet
     val got = graft.operators.EditJoin
-      .editDistancePairs(rows.toDF("id", "str"), "id", "str")
+      .editDistancePairs(rows.toDF("id", "str"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == expected)
     assert(expected.nonEmpty) // the fixture really exercises the operator
@@ -2093,8 +2090,7 @@ class OperatorsSpec extends SparkSpec {
     val vecs = (1 to 9).map(i => (i.toLong, Seq(0.001f * i, 0.0f))) :+
       (10L, Seq(100.0f, 100.0f))
     val got = graft.operators.Similarity
-      .centroidOutliers(vecs.toDF("vec_id", "embedding"),
-        "vec_id", "embedding", pct = 0.9)
+      .centroidOutliers(vecs.toDF("vec_id", "embedding"), pct = 0.9)
       .collect().map(_.getLong(0)).toSeq
     assert(got == Seq(10L))
   }
@@ -2107,14 +2103,14 @@ class OperatorsSpec extends SparkSpec {
     // 20-row draw picks (deterministically) only heavy rows
     val rows = (0 until 100).map(i => ("g", i.toLong, 1000.0)) ++
       (100 until 200).map(i => ("g", i.toLong, 0.1))
-    val df = rows.toDF("grp", "id", "w")
+    val df = rows.toDF("lang", "doc_id", "w")
     val got = graft.operators.Sampling
-      .weightedSample(df, "grp", "id", col("w"), n = 20)
+      .weightedSample(df, col("w"), n = 20)
       .collect().map(r => (r.getLong(1), r.getInt(3)))
     assert(got.length == 20 && got.forall(_._1 < 100L))
     // determinism: a second run draws the identical sample
     val again = graft.operators.Sampling
-      .weightedSample(df, "grp", "id", col("w"), n = 20)
+      .weightedSample(df, col("w"), n = 20)
       .collect().map(r => (r.getLong(1), r.getInt(3)))
     assert(got.toSeq.sorted == again.toSeq.sorted)
   }
@@ -2167,8 +2163,8 @@ class OperatorsSpec extends SparkSpec {
     // hour 0: two points (8, 12) -> mean 10; hours 1-2 empty; hour 3: 40.
     // Linear fill: h1 = 20, h2 = 30.
     val pts = Seq(("k", ts(0, 10), 8.0), ("k", ts(0, 50), 12.0),
-      ("k", ts(3, 0), 40.0)).toDF("k", "ts", "v")
-    val got = graft.operators.TimeSeries.gapFillHourly(pts, "k", "ts", "v")
+      ("k", ts(3, 0), 40.0)).toDF("event_type", "ts", "value")
+    val got = graft.operators.TimeSeries.gapFillHourly(pts)
       .orderBy(col("hour")).collect()
     assert(got.length == 4)
     assert(got.map(_.getLong(2)).toSeq == Seq(2L, 0L, 0L, 1L))
@@ -2189,7 +2185,7 @@ class OperatorsSpec extends SparkSpec {
       (2L, ts(5), "A", 21L), (2L, ts(5), "B", 20L))
       .toDF("user_id", "ts", "state", "eid")
     val got = graft.operators.TimeSeries
-      .scd2History(rows, "user_id", "ts", "state", "eid")
+      .scd2History(rows.withColumnRenamed("eid", "event_id").withColumnRenamed("state", "event_type"))
       .orderBy(col("user_id"), col("version")).collect()
     assert(got.map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((1L, "A"), (1L, "B"), (1L, "A"), (2L, "B"), (2L, "A")))
@@ -2207,7 +2203,7 @@ class OperatorsSpec extends SparkSpec {
     import s.implicits._
     val df = Seq(("A", 1), ("A", 0), ("B", 0), ("B", 0))
       .toDF("arm", "converted")
-    val r = graft.operators.Stats.abZTest(df, "arm", "converted")
+    val r = graft.operators.Stats.abZTest(df)
       .collect()(0)
     assert(r.getLong(0) == 2L && r.getLong(1) == 2L)
     assert(r.getLong(2) == 1L && r.getLong(3) == 0L)
@@ -2237,7 +2233,7 @@ class OperatorsSpec extends SparkSpec {
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d e f g"),
       (3L, "q r s t u v")).toDF("doc_id", "text")
     val got = graft.operators.Retrieval
-      .containmentPairs(docs, "doc_id", "text", shingleN = 3,
+      .containmentPairs(docs,
         maxDf = 100, threshold = 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
     // doc1 (3 shingles) fully inside doc2 (5 shingles): 1 in 2 = 3/3,
@@ -2255,7 +2251,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, Seq(10.0f, 0.0f), 1), (4L, Seq(10.2f, 0.0f), 1))
       .toDF("vec_id", "embedding", "label")
     val got = graft.operators.Similarity
-      .simplifiedSilhouette(vecs, "vec_id", "embedding", "label")
+      .simplifiedSilhouette(vecs)
       .orderBy(col("label")).collect()
     assert(got.map(_.getLong(1)).toSeq == Seq(2L, 2L))
     got.foreach(r => assert(math.abs(r.getDouble(2) - 0.989999) < 1e-6))
@@ -2266,7 +2262,7 @@ class OperatorsSpec extends SparkSpec {
     import s.implicits._
     val df = (1 to 100).map(_.toDouble).toDF("x")
     val got = graft.operators.Stats
-      .equiDepthHistogram(df, Seq("x"), buckets = 10)
+      .equiDepthHistogram(df, Seq("x"))
       .collect().map(r => (r.getInt(1), r.getDouble(2)))
     assert(got.length == 9)
     // boundary at q: v[(n-1)q] interpolated -> 10.9, 20.8, ... 50.5 ...
@@ -2316,7 +2312,7 @@ class OperatorsSpec extends SparkSpec {
     val docs = Seq(("X", "apple apple banana"), ("Y", "cherry banana"))
       .toDF("source", "text")
     val got = graft.operators.TextAnalysis
-      .cTfIdf(docs, "source", "text", topK = 1)
+      .cTfIdf(docs, topK = 1)
       .orderBy(col("class")).collect()
     // masses X=3, Y=2, A=2.5; w(X,apple)=2*ln(1+2.5/2)=1.62186,
     // w(Y,cherry)=ln(1+2.5/1)=1.252763
@@ -2328,13 +2324,13 @@ class OperatorsSpec extends SparkSpec {
   test("psiDrift: identical slices score 0; a hard shift crosses 0.25") {
     val s = spark
     import s.implicits._
-    val ref = (1 to 100).map(_.toDouble).toDF("v")
-    val same = (1 to 100).map(_.toDouble).toDF("v")
-    val shifted = (51 to 150).map(_.toDouble).toDF("v")
-    val psi0 = graft.operators.Stats.psiDrift(ref, same, "v")
+    val ref = (1 to 100).map(_.toDouble).toDF("value")
+    val same = (1 to 100).map(_.toDouble).toDF("value")
+    val shifted = (51 to 150).map(_.toDouble).toDF("value")
+    val psi0 = graft.operators.Stats.psiDrift(ref, same)
       .collect()(0).getDouble(6)
     assert(psi0 == 0.0)
-    val psi1 = graft.operators.Stats.psiDrift(ref, shifted, "v")
+    val psi1 = graft.operators.Stats.psiDrift(ref, shifted)
       .collect()(0).getDouble(6)
     assert(psi1 > 0.25)
   }
@@ -2350,7 +2346,7 @@ class OperatorsSpec extends SparkSpec {
         ("k", java.sql.Timestamp.valueOf(f"2024-03-01 $h%02d:15:00")))
     }
     val got = graft.operators.TimeSeries
-      .theilSenTrend(rows.toDF("k", "ts"), "k", "ts").collect()(0)
+      .theilSenTrend(rows.toDF("event_type", "ts")).collect()(0)
     assert(got.getLong(1) == 10L)
     assert(got.getDouble(2) == 2.0)
     assert(got.getDouble(3) == 3.0)
@@ -2367,7 +2363,7 @@ class OperatorsSpec extends SparkSpec {
         ("k", java.sql.Timestamp.valueOf(f"2024-03-${d + 1}%02d 03:10:00")))
     }
     val got = graft.operators.TimeSeries
-      .seasonalAnomalies(rows.toDF("k", "ts"), "k", "ts")
+      .seasonalAnomalies(rows.toDF("event_type", "ts"))
       .collect()
     assert(got.length == 1)
     assert(got(0).getLong(2) == 100L && got(0).getInt(3) == 3)
@@ -2388,7 +2384,7 @@ class OperatorsSpec extends SparkSpec {
       }
     }
     val got = graft.operators.TimeSeries
-      .cusumChangepoints(rows.toDF("k", "ts"), "k", "ts")
+      .cusumChangepoints(rows.toDF("event_type", "ts"))
       .orderBy(col("hour")).collect()
     assert(got.length == 30)
     // replay Page's recurrence S <- max(0, S + z - k) sequentially over
@@ -2416,7 +2412,7 @@ class OperatorsSpec extends SparkSpec {
     // user 1 on days 1 and 5, user 2 on day 1 only
     val rows = Seq((1L, ts(1)), (1L, ts(1)), (1L, ts(5)), (2L, ts(1)))
     val got = graft.operators.TimeSeries
-      .activeUsers(rows.toDF("u", "ts"), "ts", "u")
+      .activeUsers(rows.toDF("user_id", "ts"))
       .orderBy(col("day"))
       .collect()
     assert(got.length == 2)
@@ -2455,7 +2451,7 @@ class OperatorsSpec extends SparkSpec {
     // beats 0.7 and ties 0.8 -> (2 + 1 + 0.5) / 4 = 0.875
     val rows = Seq((0.9, true), (0.8, true), (0.8, false), (0.7, false))
     val got = graft.operators.Stats
-      .aucRankSum(rows.toDF("score", "pos"), "score", "pos").collect()(0)
+      .aucRankSum(rows.toDF("score", "pos")).collect()(0)
     assert(got.getLong(0) == 2L && got.getLong(1) == 2L)
     assert(got.getDouble(2) == 0.875)
   }
@@ -2472,7 +2468,7 @@ class OperatorsSpec extends SparkSpec {
           100.0 * i))
     }
     val got = graft.operators.Stats
-      .rfmSegments(rows.toDF("c", "d", "amt"), "c", "d", "amt")
+      .rfmSegments(rows.toDF("o_custkey", "o_orderdate", "o_totalprice"))
       .collect()
     assert(got.length == 5)
     for (r <- got) {
@@ -2492,7 +2488,7 @@ class OperatorsSpec extends SparkSpec {
     val rows = Seq.fill(20)((true, true)) ++ Seq.fill(15)((false, false)) ++
       Seq.fill(10)((true, false)) ++ Seq.fill(5)((false, true))
     val got = graft.operators.Stats
-      .cohenKappa(rows.toDF("a", "b"), "a", "b").collect()(0)
+      .cohenKappa(rows.toDF("a", "b")).collect()(0)
     assert(got.getLong(0) == 50L)
     assert(got.getDouble(1) == 0.7 && got.getDouble(2) == 0.5)
     assert(got.getDouble(3) == 0.4)
@@ -2505,7 +2501,7 @@ class OperatorsSpec extends SparkSpec {
     // bin 2: conf 0.2, acc 0.0 -> |gap| 0.2 on the other half
     val rows = Seq((0.8, true), (0.8, false), (0.2, false), (0.2, false))
     val got = graft.operators.Stats
-      .calibration(rows.toDF("p", "y"), "p", "y")
+      .calibration(rows.toDF("p", "is_hq"))
       .orderBy(col("bucket")).collect()
     assert(got.length == 2)
     assert(got(0).getInt(0) == 2 && got(0).getDouble(2) == 0.2
@@ -2521,12 +2517,12 @@ class OperatorsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val eq = graft.operators.Stats
-      .giniConcentration(Seq(5L, 5L, 5L, 5L).toDF("v"), "v")
+      .giniConcentration(Seq(5L, 5L, 5L, 5L).toDF("n_chars"))
       .collect()(0)
     assert(eq.getLong(0) == 4L && eq.getLong(1) == 20L
       && eq.getDouble(2) == 0.0)
     val one = graft.operators.Stats
-      .giniConcentration(Seq(0L, 0L, 0L, 10L).toDF("v"), "v")
+      .giniConcentration(Seq(0L, 0L, 0L, 10L).toDF("n_chars"))
       .collect()(0)
     assert(one.getDouble(2) == 0.75)
   }
@@ -2540,7 +2536,7 @@ class OperatorsSpec extends SparkSpec {
     val rows = Seq((1L, ts(1)), (1L, ts(11)), (2L, ts(1)), (2L, ts(21)),
       (3L, ts(5)), (3L, ts(28)), (4L, ts(1)), (4L, ts(30)))
     val got = graft.operators.TimeSeries
-      .kaplanMeierRetention(rows.toDF("u", "ts"), "u", "ts")
+      .kaplanMeierRetention(rows.toDF("unit", "ts"))
       .orderBy(col("t_days")).collect()
     assert(got.length == 2)
     assert(got(0).getLong(0) == 10L && got(0).getLong(1) == 4L
@@ -2562,7 +2558,7 @@ class OperatorsSpec extends SparkSpec {
           .parse("2024-03-01T00:30:00Z").plusSeconds(h * 3600L))))
     }
     val got = graft.operators.TimeSeries
-      .stlDecompose(rows.toDF("k", "ts"), "k", "ts")
+      .stlDecompose(rows.toDF("event_type", "ts"))
       .orderBy(col("hour")).collect()
     assert(got.length == 25) // hours 12..36 carry a full 24-term window
     val trend = BigDecimal(245.0 / 24)
@@ -2579,8 +2575,8 @@ class OperatorsSpec extends SparkSpec {
   test("benfordAudit: digit extraction and the Benford expectation") {
     val s = spark
     import s.implicits._
-    val rows = Seq(123.45, 150.0, 234.5, 987.0, 1.99).toDF("amt")
-    val got = graft.operators.Stats.benfordAudit(rows, "amt")
+    val rows = Seq(123.45, 150.0, 234.5, 987.0, 1.99).toDF("o_totalprice")
+    val got = graft.operators.Stats.benfordAudit(rows)
       .orderBy(col("digit")).collect()
     assert(got.map(r => (r.getInt(0), r.getLong(1))).toSeq
       == Seq((1, 3L), (2, 1L), (9, 1L)))
@@ -2595,12 +2591,12 @@ class OperatorsSpec extends SparkSpec {
     import s.implicits._
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
     val one = graft.operators.Graph
-      .bfsHops(path, Seq(1L).toDF("node"), maxHops = 3)
+      .bfsHops(path, Seq(1L).toDF("node"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
     // node 5 is 4 hops out -> beyond the horizon, absent
     assert(one == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
     val two = graft.operators.Graph
-      .bfsHops(path, Seq(1L, 5L).toDF("node"), maxHops = 3)
+      .bfsHops(path, Seq(1L, 5L).toDF("node"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
     // two sources: each node takes the MIN over both
     assert(two == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 1, 5L -> 0))
@@ -2609,11 +2605,10 @@ class OperatorsSpec extends SparkSpec {
   test("bloomPrunedJoin: exactly the plain join, pruning included") {
     val s = spark
     import s.implicits._
-    val fact = (1L to 200L).map(i => (i, i % 10)).toDF("fk", "grp")
-    val dim = Seq((3L, "x"), (7L, "y"), (500L, "z")).toDF("dk", "tag")
-    val got = graft.operators.Skew
-      .bloomPrunedJoin(fact, dim, "fk", "dk")
-      .select(col("fk"), col("tag")).collect()
+    val fact = (1L to 200L).map(i => (i, i % 10)).toDF("l_partkey", "grp")
+    val dim = Seq((3L, "x"), (7L, "y"), (500L, "z")).toDF("p_partkey", "tag")
+    val got = graft.operators.Skew.bloomPrunedJoin(fact, dim)
+      .select(col("l_partkey"), col("tag")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got == Set((3L, "x"), (7L, "y")))
   }
@@ -2627,9 +2622,9 @@ class OperatorsSpec extends SparkSpec {
       (2L, "b3", 10L, 2L, "U"), // same ts: the tie column must decide
       (3L, "gone", 5L, 1L, "D"),
       (4L, "d", 1L, 1L, "U"))   // insert of a key the base lacks
-      .toDF("k", "v", "ts", "tie", "op")
+      .toDF("c_custkey", "v", "ts", "tie", "op")
     val got = graft.operators.SnapshotDiff
-      .applyChangelog(base, ch, "k", "ts", "tie", "op", Seq("v"))
+      .applyChangelog(base.withColumnRenamed("k", "c_custkey"), ch, Seq("v"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(got == Map(1L -> "a", 2L -> "b3", 4L -> "d"))
   }
@@ -2658,9 +2653,9 @@ class OperatorsSpec extends SparkSpec {
     // values 1..4 with weights 1,1,1,7: half the MASS sits at value 4
     // even though the row median is 2.5
     val rows = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 7L))
-      .map { case (v, w) => ("k", v, w) }.toDF("g", "v", "w")
+      .map { case (v, w) => ("k", v, w) }.toDF("source", "v", "w")
     val got = graft.operators.Stats
-      .weightedQuantiles(rows, "g", "v", "w", Seq(25, 50, 75))
+      .weightedQuantiles(rows, "v", "w", Seq(25, 50, 75))
       .collect().map(r => (r.getInt(1), r.getLong(2))).toMap
     assert(got == Map(25 -> 3L, 50 -> 4L, 75 -> 4L))
   }
@@ -2671,13 +2666,13 @@ class OperatorsSpec extends SparkSpec {
     val indep = Seq.fill(20)(("x", "0")) ++ Seq.fill(20)(("x", "1")) ++
       Seq.fill(10)(("y", "0")) ++ Seq.fill(10)(("y", "1"))
     val gi = graft.operators.Stats
-      .contingencyStats(indep.toDF("a", "b"), "a", "b").collect()(0)
+      .contingencyStats(indep.toDF("a", "b")).collect()(0)
     assert(gi.getLong(0) == 60L && gi.getLong(1) == 1L)
     assert(gi.getDouble(2) == 0.0 && gi.getDouble(3) == 0.0)
     // perfect dependence: chi2 = n, MI = ln 2
     val dep = Seq.fill(30)(("x", "0")) ++ Seq.fill(30)(("y", "1"))
     val gd = graft.operators.Stats
-      .contingencyStats(dep.toDF("a", "b"), "a", "b").collect()(0)
+      .contingencyStats(dep.toDF("a", "b")).collect()(0)
     assert(gd.getDouble(2) == 60.0)
     assert(gd.getDouble(3) == BigDecimal(math.log(2.0))
       .setScale(9, BigDecimal.RoundingMode.HALF_UP)
@@ -2688,7 +2683,7 @@ class OperatorsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val got = graft.operators.Stats
-      .percentileRanks(Seq(1L, 1L, 2L, 3L).toDF("v"), "v")
+      .percentileRanks(Seq(1L, 1L, 2L, 3L).toDF("n_chars"))
       .orderBy(col("v")).collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toSeq
     assert(got == Seq((1L, 0.25), (2L, 0.625), (3L, 0.875)))
@@ -2702,9 +2697,9 @@ class OperatorsSpec extends SparkSpec {
     // dominated by (20, .5)
     val rows = Seq((1L, 10L, 0.5), (2L, 20L, 0.5), (3L, 20L, 0.5),
       (4L, 15L, 0.9), (5L, 20L, 0.4), (6L, 30L, 0.1))
-      .toDF("id", "x", "y")
+      .toDF("doc_id", "x", "y")
     val got = graft.operators.TopK
-      .paretoFrontier(rows, "id", col("x"), col("y"))
+      .paretoFrontier(rows, col("x"), col("y"))
       .collect().map(_.getLong(0)).toSet
     assert(got == Set(2L, 3L, 4L, 6L))
   }
@@ -2718,7 +2713,7 @@ class OperatorsSpec extends SparkSpec {
     val corpus = Seq((1L, "a b c x"), (2L, "q r s t"))
       .toDF("doc_id", "text")
     val got = graft.operators.TextAnalysis
-      .noveltyVsReference(corpus, ref, "doc_id", "text", n = 3)
+      .noveltyVsReference(corpus, ref)
       .orderBy(col("id")).collect()
     assert(got(0).getLong(1) == 2L && got(0).getLong(2) == 1L
       && got(0).getDouble(3) == 0.5)
@@ -2733,7 +2728,7 @@ class OperatorsSpec extends SparkSpec {
     val docs = Seq((0L, "a b"), (1L, "b c"), (2L, "a d"), (3L, "d a"))
       .toDF("doc_id", "text")
     val got = graft.operators.TextAnalysis
-      .vocabGrowth(docs, "doc_id", "text", batches = 2)
+      .vocabGrowth(docs, batches = 2)
       .orderBy(col("batch")).collect()
     assert(got.length == 2)
     assert(got(0).getInt(0) == 0 && got(0).getLong(1) == 4L
@@ -2756,7 +2751,7 @@ class OperatorsSpec extends SparkSpec {
     val text = words.flatMap { case (w, n) => Seq.fill(n)(w) }
       .mkString(" ")
     val got = graft.operators.TextAnalysis
-      .zipfFit(Seq((1L, text)).toDF("doc_id", "text"), "text")
+      .zipfFit(Seq((1L, text)).toDF("doc_id", "text"))
       .collect()(0)
     assert(got.getLong(0) == 5L)
     assert(math.abs(got.getDouble(1) - (-1.0)) < 1e-6, got)
@@ -2772,7 +2767,7 @@ class OperatorsSpec extends SparkSpec {
     val rows = (0 until 5).map(i => (1L, ts(i * 60))) ++
       Seq((2L, ts(0)), (2L, ts(1)), (2L, ts(3600)), (2L, ts(3601)))
     val got = graft.operators.TimeSeries
-      .interEventBurstiness(rows.toDF("u", "ts"), "u", "ts")
+      .interEventBurstiness(rows.toDF("user_id", "ts"))
       .orderBy(col("entity")).collect()
     assert(got(0).getLong(1) == 4L && got(0).getDouble(3) == -1.0)
     // gaps (1, 3599, 1): sigma/mu ~ 1.41 -> B ~ +0.17, clearly bursty
@@ -2789,7 +2784,7 @@ class OperatorsSpec extends SparkSpec {
     val docs = Seq((1L, "red apple and red apple pie and the sky"))
       .toDF("doc_id", "text")
     val got = graft.operators.TextAnalysis
-      .rakeKeywords(docs, "doc_id", "text").collect()
+      .rakeKeywords(docs).collect()
     assert(got.length == 1)
     assert(got(0).getString(1) == "red apple pie")
     assert(got(0).getDouble(2) == 8.0)
@@ -2828,14 +2823,14 @@ class OperatorsSpec extends SparkSpec {
     val sep = Seq((0, v(0, 0)), (0, v(0.1, 0)), (1, v(10, 10)),
       (1, v(10.1, 10))).toDF("label", "embedding")
     val fs = graft.operators.Similarity
-      .fisherSeparation(sep, "label", "embedding").collect()(0)
+      .fisherSeparation(sep).collect()(0)
     assert(fs.getLong(0) == 2L && fs.getInt(1) == 2)
     assert(fs.getDouble(4) > 1000.0)
     // identical distributions -> between ~ 0
     val mix = Seq((0, v(0, 0)), (0, v(1, 1)), (1, v(0, 0)),
       (1, v(1, 1))).toDF("label", "embedding")
     val fm = graft.operators.Similarity
-      .fisherSeparation(mix, "label", "embedding").collect()(0)
+      .fisherSeparation(mix).collect()(0)
     assert(fm.getDouble(2) == 0.0)
   }
 
@@ -2845,7 +2840,7 @@ class OperatorsSpec extends SparkSpec {
     val rows = Seq((1L, "A"), (1L, "B"), (1L, "C"), (2L, "A"), (2L, "B"),
       (3L, "A"), (3L, "B"), (4L, "C"))
     val got = graft.operators.Stats
-      .associationLift(rows.toDF("bk", "it"), "bk", "it",
+      .associationLift(rows.toDF("l_orderkey", "l_partkey"),
         minCount = 2, topN = 10)
       .collect()
     // only (A,B) clears minCount=2: n_ab=3, N=4, n_A=3, n_B=3
@@ -2868,9 +2863,9 @@ class OperatorsSpec extends SparkSpec {
     val docs = (0L until 40L).map { i =>
       if (i % 2 == 0) (i, "alpha beta gamma alpha", "x")
       else (i, "delta epsilon zeta delta", "y")
-    }.toDF("doc_id", "text", "lab")
+    }.toDF("doc_id", "text", "lang")
     val cm = graft.operators.NaiveBayes
-      .confusionMatrix(docs, "doc_id", "text", "lab")
+      .confusionMatrix(docs)
       .collect()
     assert(cm.nonEmpty)
     cm.foreach { r =>
@@ -2902,7 +2897,7 @@ class OperatorsSpec extends SparkSpec {
       if (i % 2 == 0) (id, "alpha beta", "x") else (id, "delta zeta", "y")
     } :+ ((testId, "omega omega", "y"))).toDF("doc_id", "text", "lab")
     val cm = graft.operators.NaiveBayes
-      .confusionMatrix(docs, "doc_id", "text", "lab")
+      .confusionMatrix(docs.withColumnRenamed("lab", "lang"))
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(cm == Map(("y", "x") -> 1L))
@@ -2916,7 +2911,7 @@ class OperatorsSpec extends SparkSpec {
     // fk = 0.39*(5/2) + 11.8*(6/5) - 15.59 = 0.975 + 14.16 - 15.59
     val df = Seq(("s1", "Hello world. This is fun!")).toDF("source", "text")
     val got = graft.operators.TextAnalysis
-      .readabilityBySource(df, "source", "text").collect()(0)
+      .readabilityBySource(df).collect()(0)
     val expect = BigDecimal(0.39 * (5.0 / 2.0) + 11.8 * (6.0 / 5.0) - 15.59)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(got.getLong(1) == 1L)
@@ -2925,7 +2920,7 @@ class OperatorsSpec extends SparkSpec {
     // empty doc: words floor 1, sentences floor 1, syllables 0
     val empty = Seq(("s1", "")).toDF("source", "text")
     val g2 = graft.operators.TextAnalysis
-      .readabilityBySource(empty, "source", "text").collect()(0)
+      .readabilityBySource(empty).collect()(0)
     assert(g2.getDouble(2) == BigDecimal(0.39 + 0.0 - 15.59)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
   }
@@ -2935,10 +2930,10 @@ class OperatorsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = (0 until 100).map(i => Tuple1(if (i < 70) "a" else "b"))
-      .toDF("g")
-    val run1 = graft.operators.Stats.dpNoisyCounts(df, "g", epsilon = 1.0)
+      .toDF("event_type")
+    val run1 = graft.operators.Stats.dpNoisyCounts(df)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val run2 = graft.operators.Stats.dpNoisyCounts(df, "g", epsilon = 1.0)
+    val run2 = graft.operators.Stats.dpNoisyCounts(df)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(run1 == run2) // retry-stable
     // replay the draw for group "a" (count 70) in plain Scala
@@ -2968,7 +2963,7 @@ class OperatorsSpec extends SparkSpec {
     val t1 = java.sql.Timestamp.valueOf("2024-01-01 11:30:00")
     val rows = Seq.fill(2)(("A", t0)) ++ Seq.fill(4)(("A", t1))
     val got = graft.operators.TimeSeries
-      .ewmaHourly(rows.toDF("k", "ts"), "k", "ts")
+      .ewmaHourly(rows.toDF("event_type", "ts"))
       .collect().map(r => r.getString(1) -> (r.getLong(2), r.getDouble(3)))
       .toMap
     // first hour: only itself in the window -> ewma = own count
@@ -2985,9 +2980,9 @@ class OperatorsSpec extends SparkSpec {
     // tuple (x,1): 3 rows, 1 distinct user -> risky at l=3
     // tuple (x,2): 3 rows, 3 distinct users -> fine
     val df = Seq(("x", 1, 10L), ("x", 1, 10L), ("x", 1, 10L),
-      ("x", 2, 1L), ("x", 2, 2L), ("x", 2, 3L)).toDF("a", "b", "u")
+      ("x", 2, 1L), ("x", 2, 2L), ("x", 2, 3L)).toDF("a", "b", "user_id")
     val got = graft.operators.Stats
-      .lDiversityAudit(df, Seq("a", "b"), "u", l = 3).collect()(0)
+      .lDiversityAudit(df, Seq("a", "b")).collect()(0)
     assert(got.getString(0) == "x")
     assert(got.getLong(1) == 2L)      // tuples
     assert(got.getLong(2) == 1L)      // low-diversity tuples
@@ -3004,7 +2999,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, Array(-1f, -0.1f)), (4L, Array(-2f, -0.2f)))
       .toDF("vec_id", "embedding")
     val got = graft.operators.Similarity
-      .pcaTopComponent(df, "vec_id", "embedding")
+      .pcaTopComponent(df)
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     assert(got(0) == 1.0)
     assert(math.abs(got(1) - 0.1) < 1e-4)
@@ -3017,7 +3012,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq((1L, v(0)), (2L, v(10)), (3L, v(1)), (4L, v(5)))
       .toDF("vec_id", "embedding")
     val got = graft.operators.Similarity
-      .kCenterCoreset(df, "vec_id", "embedding", k = 4)
+      .kCenterCoreset(df, k = 4)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     // seed = lowest id (pos 0); then pos 10 (d2=100); then pos 5
     // (min(25,25)=25); then pos 1 (d2=1)
@@ -3058,8 +3053,7 @@ class OperatorsSpec extends SparkSpec {
       (i, drift.mkString(" "))
     }
     val df = docs.toDF("doc_id", "text")
-    val got = Dedup.prefixFilterJaccardPairs(df, "doc_id", "text",
-        shingleN = 3, thetaNum = 1, thetaDen = 2)
+    val got = Dedup.prefixFilterJaccardPairs(df)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute force the same shingle algebra in Scala
     def sh(t: String): Set[String] = {
@@ -3082,9 +3076,9 @@ class OperatorsSpec extends SparkSpec {
     val docs = (0L until 80L).map { i =>
       if (i % 2 == 0) (i, "alpha beta gamma", "x")
       else (i, "delta epsilon zeta", "y")
-    }.toDF("doc_id", "text", "lab")
+    }.toDF("doc_id", "text", "lang")
     val got = graft.operators.NaiveBayes
-      .crossValAccuracy(docs, "doc_id", "text", "lab")
+      .crossValAccuracy(docs)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(3)))
     assert(got.map(_._1).toSeq == Seq(0, 1, 2, 3))
     assert(got.map(_._2).sum == 80L) // folds partition the corpus
@@ -3102,7 +3096,7 @@ class OperatorsSpec extends SparkSpec {
       (2L, "spark shuffle partition partition"),
       (3L, "zebra yak unrelated words here")).toDF("doc_id", "text")
     val got = graft.operators.Retrieval
-      .rm3ExpandTerms(df, "doc_id", "text", Seq("spark"),
+      .rm3ExpandTerms(df, Seq("spark"),
         fbDocs = 2, fbTerms = 2)
     // tf over docs 1,2: shuffle=3, partition=3 -> tie breaks on term asc
     assert(got == Seq("spark", "partition", "shuffle"))
@@ -3119,8 +3113,7 @@ class OperatorsSpec extends SparkSpec {
       (2L, "A"), (2L, "B"), (2L, "C"),
       (3L, "A"), (3L, "B"), (3L, "D"))
     val got = graft.operators.Stats
-      .frequentTriples(rows.toDF("bk", "it"), "bk", "it",
-        minCount = 2, topN = 10)
+      .frequentTriples(rows.toDF("l_orderkey", "l_partkey"), topN = 10)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3)))
     assert(got.toSeq == Seq(("A", "B", "C", 2L)))
@@ -3166,7 +3159,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq((1L, 4L, 0.8), (2L, 4L, 0.5), (3L, 4L, 0.9),
       (4L, 4L, 0.1)).toDF("doc_id", "w", "s")
     val got = graft.operators.Sampling
-      .budgetSelect(df, "doc_id", col("w"), col("s"), budget = 9L,
+      .budgetSelect(df, col("w"), col("s"), budget = 9L,
         nBuckets = 2)
       .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     assert(got == Map(1L -> true, 2L -> true, 3L -> true, 4L -> false))
@@ -3174,7 +3167,7 @@ class OperatorsSpec extends SparkSpec {
     val ties = Seq((10L, 5L, 0.5), (11L, 5L, 0.5), (12L, 5L, 0.5))
       .toDF("doc_id", "w", "s")
     val g2 = graft.operators.Sampling
-      .budgetSelect(ties, "doc_id", col("w"), col("s"), budget = 10L,
+      .budgetSelect(ties, col("w"), col("s"), budget = 10L,
         nBuckets = 4)
       .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     assert(g2 == Map(10L -> true, 11L -> true, 12L -> false))
@@ -3189,7 +3182,7 @@ class OperatorsSpec extends SparkSpec {
       ("c", "solo")           // uni: 1/1; bi: none -> 0
     ).toDF("source", "text")
     val got = graft.operators.TextAnalysis
-      .distinctNgramDiversity(df, "source", "text")
+      .distinctNgramDiversity(df)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3),
           r.getLong(4), r.getLong(5), r.getDouble(6))).toMap
@@ -3218,7 +3211,7 @@ class OperatorsSpec extends SparkSpec {
     assert((0 until 3).forall(d =>
       cmsBucket(d, "a", 32) != cmsBucket(d, "b", 32)))
     val wide = graft.operators.Stats
-      .cmsHeavyHitters(toks, "token", "batch",
+      .cmsHeavyHitters(toks,
         depth = 3, width = 32, minShare = 0.01)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
@@ -3235,7 +3228,7 @@ class OperatorsSpec extends SparkSpec {
       "a" -> (0 until 1).map(d => cell(d, "a")).min,
       "b" -> (0 until 1).map(d => cell(d, "b")).min)
     val narrow = graft.operators.Stats
-      .cmsHeavyHitters(toks, "token", "batch",
+      .cmsHeavyHitters(toks,
         depth = 1, width = w2, minShare = 0.01)
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(narrow("a") == expected("a"))
@@ -3267,13 +3260,13 @@ class OperatorsSpec extends SparkSpec {
     "identical samples -> 0") {
     val s = spark
     import s.implicits._
-    val ref = Seq(1L, 2L, 3L, 4L).toDF("v")
-    val cur = Seq(3L, 4L, 5L, 6L).toDF("v")
-    val r = graft.operators.Stats.ksDrift(ref, cur, "v").collect()(0)
+    val ref = Seq(1L, 2L, 3L, 4L).toDF("sv")
+    val cur = Seq(3L, 4L, 5L, 6L).toDF("sv")
+    val r = graft.operators.Stats.ksDrift(ref, cur).collect()(0)
     // |F_ref - F_cur|: v=1: .25, v=2: .5, v=3: .5, v=4: .5, v=5: .25
     assert(r.getLong(0) == 4L && r.getLong(1) == 4L)
     assert(r.getDouble(2) == 0.5 && r.getLong(3) == 2L)
-    val same = graft.operators.Stats.ksDrift(ref, ref, "v").collect()(0)
+    val same = graft.operators.Stats.ksDrift(ref, ref).collect()(0)
     assert(same.getDouble(2) == 0.0 && same.getLong(3) == 1L)
   }
 
@@ -3284,9 +3277,9 @@ class OperatorsSpec extends SparkSpec {
     // 20 points exactly on y = 3x + 2, one gross outlier
     val line = (1 to 20).map(i => ("g", i.toDouble, 3.0 * i + 2.0))
     val df = (line :+ (("g", 21.0, 500.0)) :+
-      (("perfect", 1.0, 5.0)) :+ (("perfect", 2.0, 6.0))).toDF("g", "x", "y")
+      (("perfect", 1.0, 5.0)) :+ (("perfect", 2.0, 6.0))).toDF("g", "toks", "n_chars")
     val got = graft.operators.Stats
-      .olsResidualOutliers(df, "g", "x", "y", keepCols = Seq(), kSigma = 2.0)
+      .olsResidualOutliers(df.withColumnRenamed("g", "source"), keepCols = Seq())
       .collect()
     assert(got.length == 1)
     assert(got(0).getString(0) == "g" && got(0).getDouble(1) == 21.0)
@@ -3304,8 +3297,8 @@ class OperatorsSpec extends SparkSpec {
     val ref = Seq(("g1", 1L), ("g1", 2L), ("g2", 5L), ("g2", 6L),
       ("g3", 9L)).toDF("g", "v")
     val cur = Seq(("g1", 10L), ("g1", 11L), ("g2", 5L), ("g2", 6L))
-      .toDF("g", "v")
-    val got = graft.operators.Stats.ksDriftByGroup(ref, cur, "g", "v")
+      .toDF("event_type", "sv")
+    val got = graft.operators.Stats.ksDriftByGroup(ref.withColumnRenamed("v", "sv").withColumnRenamed("g", "event_type"), cur)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4))).toMap
     assert(got.keySet == Set("g1", "g2"))
@@ -3327,7 +3320,7 @@ class OperatorsSpec extends SparkSpec {
       (10L, 0.26, 0.26)                                        // cell (5,5)
     ).toDF("vec_id", "x", "y")
     val asg = graft.operators.Similarity
-      .gridDensityClusters(pts, "vec_id", "x", "y", eps = 0.05, minPts = 3L)
+      .gridDensityClusters(pts, eps = 0.05, minPts = 3L)
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(3)) None else Some(r.getLong(3)))).toMap
     val key00 = (0L + (1L << 20)) * (1L << 21) + (0L + (1L << 20))
@@ -3343,14 +3336,14 @@ class OperatorsSpec extends SparkSpec {
     "partitions report zero; ratios against the uniform ideal") {
     val s = spark
     import s.implicits._
-    val df = (Seq.fill(4)("a") ++ Seq.fill(2)("b") ++ Seq("c")).toDF("k")
+    val df = (Seq.fill(4)("a") ++ Seq.fill(2)("b") ++ Seq("c")).toDF("user_id")
     val nParts = 4
     def part(k: String): Long = {
       val hex = MessageDigest.getInstance("MD5")
         .digest(k.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
       java.lang.Long.parseLong(hex, 16) % nParts
     }
-    val got = graft.operators.Skew.partitionSkewAudit(df, "k", nParts)
+    val got = graft.operators.Skew.partitionSkewAudit(df, nParts)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(got.size == nParts, "every partition reports, empty included")
@@ -3428,14 +3421,14 @@ class OperatorsSpec extends SparkSpec {
     }.max._2
     val df = keys.toDF("k")
     val got = df.select($"k",
-        graft.operators.Sharding.hrwNode("k", 8).as("h8"),
-        graft.operators.Sharding.hrwNode("k", 9).as("h9"))
+        graft.operators.Sharding.hrwNode(8).as("h8"),
+        graft.operators.Sharding.hrwNode(9).as("h9"))
       .collect().map(r => r.getString(0) -> (r.getInt(1), r.getInt(2)))
       .toMap
     for (k <- keys) assert(got(k) == ((hrw(k, 8), hrw(k, 9))), s"key $k")
     // minimal disruption: a key moves iff the NEW node wins it
     for ((k, (h8, h9)) <- got if h8 != h9) assert(h9 == 8, s"key $k")
-    val audit = graft.operators.Sharding.reshardAudit(df, "k", 8, 9)
+    val audit = graft.operators.Sharding.reshardAudit(df.withColumnRenamed("k", "doc_id"))
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(audit("hrw") == got.count { case (_, (a, b)) => a != b })
   }
@@ -3456,7 +3449,7 @@ class OperatorsSpec extends SparkSpec {
       (5L, words(3, "f"))
     ).toDF("doc_id", "text")
     val got = graft.operators.TextAnalysis
-      .winnowingFingerprints(docs, "doc_id", "text")
+      .winnowingFingerprints(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
       .toSet
     def md5hex8(x: String) = MessageDigest.getInstance("MD5")
@@ -3491,8 +3484,8 @@ class OperatorsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = Seq(("A", 1L), ("A", 2L), ("A", 3L), ("A", 4L),
-      ("B", 11L), ("B", 12L), ("B", 13L), ("B", 14L)).toDF("g", "x")
-    val got = graft.operators.Stats.quantileNormalize(df, "g", "x")
+      ("B", 11L), ("B", 12L), ("B", 13L), ("B", 14L)).toDF("source", "n_chars")
+    val got = graft.operators.Stats.quantileNormalize(df)
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3))
       .toMap
     // pooled CDF steps at 1..4,11..14 in 1/8 increments; each group
@@ -3507,9 +3500,9 @@ class OperatorsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
-      .toDF("id", "cat", "y")
+      .toDF("doc_id", "cat", "n_chars")
     val got = graft.operators.Stats
-      .targetEncodeLoo(df, "cat", "y", m = 1L, keepCols = Seq("id"))
+      .targetEncodeLoo(df.withColumnRenamed("cat", "source"), m = 1L)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     // prior = 20; a/10 -> (20*3+60)/(2*3) = 20; a/20 -> 90/6 = 15
     assert(got == Map(1L -> 20.0, 2L -> 15.0, 3L -> 20.0))
@@ -3523,7 +3516,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq((1L, "a b a b", true), (2L, "a b c", false),
       (3L, "a a", false), (4L, "z", false)).toDF("doc_id", "text", "tr")
     val got = graft.operators.TextAnalysis
-      .bigramCrossEntropy(df, "doc_id", "text", isTrain = $"tr")
+      .bigramCrossEntropy(df, isTrain = $"tr")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
     assert(!got.contains(1L), "train docs are not scored")
@@ -3546,7 +3539,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, "a b", false), (4L, "c a", false), (5L, "a z", false))
       .toDF("doc_id", "text", "tr")
     val r = graft.operators.TextAnalysis
-      .kneserNeyXent(df, "doc_id", "text", isTrain = $"tr")
+      .kneserNeyXent(df, isTrain = $"tr")
       .collect()(0)
     // (a,b): (2-.75)/2 + .75*1/2*(1/3) = 0.75
     // (c,a): context c unseen -> P_cont(a) = 1/3
@@ -3566,7 +3559,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq((1L, "x x y"), (2L, "x z"), (3L, "z"))
       .toDF("doc_id", "text")
     val got = graft.operators.Retrieval
-      .queryLikelihood(df, "doc_id", "text", Seq("x", "y", "nope"),
+      .queryLikelihood(df, Seq("x", "y", "nope"),
         mu = 2.0, topN = 3)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
         r.getDouble(3))).toSeq
@@ -3623,7 +3616,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq(("A", 1.0, 1.0), ("A", 2.0, 2.0), ("A", 3.0, 3.0),
       ("B", 4.0, 4.0), ("B", 5.0, 5.0), ("B", 6.0, 6.0))
       .toDF("arm", "x", "y")
-    val got = graft.operators.Stats.cuped(df, "arm", "x", "y").collect()
+    val got = graft.operators.Stats.cuped(df).collect()
     val a = got(0); val b = got(1)
     assert(a.getString(0) == "A" && a.getLong(1) == 3L)
     assert(a.getDouble(2) == 2.0 && a.getDouble(3) == 3.5)
@@ -3639,9 +3632,9 @@ class OperatorsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = (1 to 20).map(i => (i.toLong, i.toDouble, 1.0))
-      .toDF("id", "numv", "denv")
+      .toDF("id", "rev", "cnt")
     val got = graft.operators.Stats
-      .jackknifeRatio(df, "id", "numv", "denv", b = 4).collect()(0)
+      .jackknifeRatio(df.withColumnRenamed("id", "user_id"), b = 4).collect()(0)
     def bucket(k: String): Long = {
       val h = MessageDigest.getInstance("MD5").digest(k.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString.substring(0, 8)
@@ -3678,7 +3671,7 @@ class OperatorsSpec extends SparkSpec {
     val bins = Seq((0L, 10L, 1L), (1L, 10L, 5L), (2L, 10L, 3L),
       (3L, 10L, 2L), (4L, 10L, 8L)).toDF("bin", "n", "pos")
     val got = graft.operators.Stats
-      .isotonicCalibration(bins, "bin", "n", "pos")
+      .isotonicCalibration(bins)
       .collect().map(r => (r.getLong(0), r.getDouble(4)))
     assert(got.toSeq == Seq(0L -> 0.1, 1L -> 0.333333, 2L -> 0.333333,
       3L -> 0.333333, 4L -> 0.8))
@@ -3687,7 +3680,7 @@ class OperatorsSpec extends SparkSpec {
     val mono = Seq((0L, 10L, 1L), (1L, 10L, 4L), (2L, 10L, 9L))
       .toDF("bin", "n", "pos")
     val g2 = graft.operators.Stats
-      .isotonicCalibration(mono, "bin", "n", "pos")
+      .isotonicCalibration(mono)
       .collect().map(r => (r.getDouble(3), r.getDouble(4)))
     assert(g2.forall(p => p._1 == p._2))
   }
@@ -3726,7 +3719,7 @@ class OperatorsSpec extends SparkSpec {
     val df = pats.map { case (b, n) => (b(0), b(1), n) }
       .toDF("g0", "g1", "n")
     val got = graft.operators.Stats
-      .fellegiSunterEm(df, Seq("g0", "g1"), "n", rounds = 5)
+      .fellegiSunterEm(df, Seq("g0", "g1"))
       .collect()
       .map(r => (r.getBoolean(0), r.getBoolean(1)) ->
         (r.getDouble(3), r.getDouble(4), r.getDouble(5))).toMap
@@ -3780,7 +3773,7 @@ class OperatorsSpec extends SparkSpec {
       (-1.0, true, 5L), (1.0, false, 5L))
     val df = rows.toDF("x1", "y", "n")
     val got = graft.operators.Stats
-      .logisticGdHist(df, Seq("x1"), "y", "n", rounds = 10)
+      .logisticGdHist(df, Seq("x1"), "y", rounds = 10)
       .collect().head
     def rd(x: Double, sc: Int) = BigDecimal(x)
       .setScale(sc, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -3818,7 +3811,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, true, 1L, 1L), (3L, false, 0L, 1L))
       .toDF("t", "x", "deaths", "total")
     val got = graft.operators.Stats
-      .coxNewtonBinary(hist, "t", "x", "deaths", "total")
+      .coxNewtonBinary(hist)
       .collect().head
     def rd(x: Double, sc: Int) = BigDecimal(x)
       .setScale(sc, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -3927,7 +3920,7 @@ class OperatorsSpec extends SparkSpec {
         a._8 + b._8, a._9 + b._9))
     val df = Seq(sums).toDF("n", "sx1", "sx2", "sx11", "sx12", "sx22",
       "sy", "sx1y", "sx2y")
-    val beta = graft.operators.Stats.ols2Beta(df, Seq("n"))
+    val beta = graft.operators.Stats.ols2Beta(df.withColumn("tr", col("n")))
       .collect()(0)
     assert(beta.getDouble(1) == 2.0 && beta.getDouble(2) == 3.0 &&
       beta.getDouble(3) == -1.0, s"exact plane: $beta")
@@ -4138,7 +4131,7 @@ class OperatorsSpec extends SparkSpec {
     val ds = s.createDataset(rows)(
       org.apache.spark.sql.Encoders.product[
         graft.operators.Multimodal.MediaRow])
-    val out = graft.operators.Multimodal.sampleVideoFrames(ds, 2)
+    val out = graft.operators.Multimodal.sampleVideoFrames(ds)
       .collect().sortBy(_.frame_idx)
       .map(f => (f.doc_id, f.frame_idx, f.width, f.height, f.red_mean))
     assert(out.toSeq == Seq((7L, 0, 4, 3, 0L), (7L, 2, 4, 3, 34L),
@@ -4175,7 +4168,7 @@ class OperatorsSpec extends SparkSpec {
       ++ Seq(("src_c", 0L)))
       .toDF("source", "toks")
     val out = graft.operators.Sampling
-      .mixturePlan(docs, "source", col("toks"), budget = 999L,
+      .mixturePlan(docs, budget = 999L,
         maxEpochs = 4)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3),
@@ -4225,7 +4218,7 @@ class OperatorsSpec extends SparkSpec {
       (s"src${rnd.nextInt(7)}", (1 + rnd.nextInt(500)).toLong))
       .toDF("source", "toks")
     val rows = graft.operators.Sampling
-      .mixturePlan(docs, "source", col("toks"), budget = 50000L,
+      .mixturePlan(docs, budget = 50000L,
         maxEpochs = 3)
       .collect()
     assert(rows.nonEmpty)
@@ -4250,7 +4243,7 @@ class OperatorsSpec extends SparkSpec {
     val docs = (1L to 10L).toDF("doc_id")
     val pairEdges = Seq((1L, 2L), (2L, 3L), (5L, 6L))
     val pairs = pairEdges.toDF("a_id", "b_id")
-    val asg = graft.operators.Dedup.clusterAwareSplit(docs, pairs, "doc_id")
+    val asg = graft.operators.Dedup.clusterAwareSplit(docs, pairs)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getString(2), r.getString(3)))).toMap
     // components: {1,2,3} rep 1, {5,6} rep 5; everything else singleton
@@ -4269,7 +4262,7 @@ class OperatorsSpec extends SparkSpec {
         org.apache.spark.sql.functions.lit(99L))
       .withColumn("cs_id", org.apache.spark.sql.functions.lit(-1L))
     val asg2 = graft.operators.Dedup
-      .clusterAwareSplit(noisy, pairs, "doc_id")
+      .clusterAwareSplit(noisy, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(asg2 == asg.map { case (k, v) => k -> v._1 },
       "pre-existing cluster_id/cs_id columns changed the assignment")
@@ -4322,7 +4315,7 @@ class OperatorsSpec extends SparkSpec {
     import s.implicits._
     val same = Seq((1L, "x", "p"), (2L, "x", "p"), (3L, "y", "q"),
       (4L, "y", "q")).toDF("id", "la", "lb")
-    val r1 = graft.operators.Stats.adjustedRandIndex(same, "la", "lb")
+    val r1 = graft.operators.Stats.adjustedRandIndex(same)
       .collect()(0)
     assert(r1.getLong(0) == 4 && r1.getLong(1) == 2 && r1.getLong(2) == 2)
     assert(r1.getDouble(3) == 1.0, s"identical: $r1")
@@ -4330,7 +4323,7 @@ class OperatorsSpec extends SparkSpec {
     // singleton -> tij = 0, ta = tb = 4, tn = 12, ARI = -0.5 by hand
     val orth = Seq((1L, "x", "p"), (2L, "x", "q"), (3L, "y", "p"),
       (4L, "y", "q")).toDF("id", "la", "lb")
-    val r2 = graft.operators.Stats.adjustedRandIndex(orth, "la", "lb")
+    val r2 = graft.operators.Stats.adjustedRandIndex(orth)
       .collect()(0)
     assert(r2.getDouble(3) == -0.5, s"orthogonal: $r2")
   }
@@ -4398,7 +4391,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, "zeta xylo qumquat verdant echoes murmur beneath glacial"),
       (4L, dup)).toDF("doc_id", "text")
     val r = graft.operators.TextAnalysis
-      .minKSurprisal(rows, "doc_id", "text")
+      .minKSurprisal(rows)
       .collect().map(x => x.getLong(0) ->
         ((x.getLong(1), x.getLong(2), x.getDouble(3), x.getDouble(4))))
       .toMap
@@ -4426,7 +4419,7 @@ class OperatorsSpec extends SparkSpec {
       (4L, "one two three four five"),
       (5L, "solo unique words entirely here")).toDF("doc_id", "text")
     val got = graft.operators.Sampling
-      .facilityLocationSelect(rows, "doc_id", "text", nCand = 6, k = 2)
+      .facilityLocationSelect(rows, nCand = 6, k = 2)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3)))
     // round 1: any of docs 0/1/2 covers 3 docs (gain 3.0) — tie-break
@@ -4504,8 +4497,7 @@ class OperatorsSpec extends SparkSpec {
     // the pairs operator verifies exact jw = 1.0
     assert(matchFrac("x x y z", "x x y z", 32) == 1.0)
     val ident = Dedup.weightedMinhashPairs(
-      Seq((1L, "x x y z"), (2L, "x x y z")).toDF("doc_id", "text"),
-      "doc_id", "text", k = 8, bands = 4)
+      Seq((1L, "x x y z"), (2L, "x x y z")).toDF("doc_id", "text"), k = 8, bands = 4)
       .collect()
     assert(ident.length == 1 && ident(0).getDouble(2) == 1.0)
     // CWS unbiasedness: P[collision] = Jw. A={x:4,y:4}, B={x:4,z:4} has
@@ -4523,8 +4515,7 @@ class OperatorsSpec extends SparkSpec {
     // P ≈ (1 − (5/7)²)³² ≈ 1e-10; threshold 3/5 keeps the pair, and jw
     // must be exactly round(5/7, 6)
     val p = Dedup.weightedMinhashPairs(
-      Seq((1L, "x x x y y z"), (2L, "x x x y y w")).toDF("doc_id", "text"),
-      "doc_id", "text", k = 64, bands = 32)
+      Seq((1L, "x x x y y z"), (2L, "x x x y y w")).toDF("doc_id", "text"), k = 64, bands = 32)
       .collect()
     assert(p.length == 1 && p(0).getDouble(2) == 0.714286)
   }
@@ -4546,14 +4537,13 @@ class OperatorsSpec extends SparkSpec {
           r.getInt(2), Option(r.get(3)).map(_.toString))).toSeq
     val labels = Seq("hit" -> Seq("alpha"), "ghost" -> Seq("zzz_not_a_word"))
     val batch = Retrieval.queryLikelihoodBatch(Retrieval.trimmedPostings(
-      docs, "doc_id", "text", labels.flatMap(_._2).distinct), labels, topN = 3)
+      docs, labels.flatMap(_._2).distinct), labels, topN = 3)
     val ghost = rows(batch.filter(col("q") === "ghost"))
-    val singleGhost = rows(Retrieval.queryLikelihood(docs, "doc_id",
-      "text", Seq("zzz_not_a_word"), mu = 100.0, topN = 3))
+    val singleGhost = rows(Retrieval.queryLikelihood(docs, Seq("zzz_not_a_word"), mu = 100.0, topN = 3))
     assert(ghost.size == 3 && ghost == singleGhost)
     assert(ghost.forall { case (_, _, nm, sc) => nm == 0 && sc.isEmpty })
     val hit = rows(batch.filter(col("q") === "hit"))
-    val singleHit = rows(Retrieval.queryLikelihood(docs, "doc_id", "text",
+    val singleHit = rows(Retrieval.queryLikelihood(docs,
       Seq("alpha"), mu = 100.0, topN = 3))
     assert(hit == singleHit)
   }
@@ -4571,22 +4561,21 @@ class OperatorsSpec extends SparkSpec {
     val idxTmp = java.nio.file.Files.createTempDirectory("graft_q108i").toString
     val labTmp = java.nio.file.Files.createTempDirectory("graft_q108l").toString
     graft.operators.Materializer.Persisted(idxTmp)(
-      Dedup.minhashIndex(evens, "doc_id", "text",
+      Dedup.minhashIndex(evens,
         bands = 4, fast = true))
     graft.operators.Materializer.Persisted(labTmp)(
-      Dedup.nearDupClusters(Dedup.minhashLshPairs(evens, "doc_id", "text",
+      Dedup.nearDupClusters(Dedup.minhashLshPairs(evens,
         bands = 4, threshold = 0.5, fast = true)))
     def labSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"))).toSet
     val full = labSet(Dedup.nearDupClusters(
-      Dedup.minhashLshPairs(docs, "doc_id", "text", bands = 4, threshold = 0.5,
+      Dedup.minhashLshPairs(docs, bands = 4, threshold = 0.5,
           fast = true)))
     // fresh session: separate registry/catalog/conf, same cluster
     val s2 = spark.newSession()
     val docs2 = s2.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val newPairs = Dedup.minhashLshPairsIncremental(
-      Dedup.minhashIndex(docs2.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text", bands = 4, fast = true),
+      Dedup.minhashIndex(docs2.filter(col("doc_id") % 2 === 1), bands = 4, fast = true),
       s2.read.parquet(s"$idxTmp/mat_0"), threshold = 0.5)
     val merged = labSet(Dedup.nearDupClustersIncremental(
       s2.read.parquet(s"$labTmp/mat_0"), newPairs))
@@ -4670,7 +4659,7 @@ class OperatorsSpec extends SparkSpec {
       (2L, "srcA", "slow scan slow scan"),
       (3L, "srcB", "nothing here")).toDF("doc_id", "source", "text")
     val out = graft.operators.TextAnalysis
-      .blocklistScan(docs, "source", "text",
+      .blocklistScan(docs,
         Seq("fast", "slow scan", "table"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3))).toSeq
@@ -4685,9 +4674,9 @@ class OperatorsSpec extends SparkSpec {
     // CROSS JOIN keeps it; a null hits array under posexplode would
     // silently delete it from the rollup)
     val withNull = Seq((1L, "srcN", "fast lane"), (2L, "srcN", null))
-      .toDF("doc_id", "src", "text")
+      .toDF("doc_id", "source", "text")
     val nOut = graft.operators.TextAnalysis
-      .blocklistScan(withNull, "src", "text", Seq("fast"))
+      .blocklistScan(withNull, Seq("fast"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3))).toSeq
     assert(nOut == Seq(("srcN", "fast", 1L, 1L)))
@@ -4768,7 +4757,7 @@ class OperatorsSpec extends SparkSpec {
       ("g", "\u00C3x is NOT the mojibake digraph"))
       .toDF("src", "text")
     val out = graft.operators.TextAnalysis
-      .encodingAudit(docs, "src", "text")
+      .encodingAudit(docs.withColumnRenamed("src", "source"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSeq
     // 6 docs: 1 repl, 1 ctrl, 1 moji, 3 clean (incl. tab/newline and
@@ -4777,9 +4766,9 @@ class OperatorsSpec extends SparkSpec {
     // NULL text counts as a clean doc (the oracle's CASE chain folds
     // every NULL predicate to 0), not as neither-flagged-nor-clean
     val withNull2 = Seq(("n", "ok text"), ("n", null))
-      .toDF("src", "text")
+      .toDF("source", "text")
     val nOut2 = graft.operators.TextAnalysis
-      .encodingAudit(withNull2, "src", "text")
+      .encodingAudit(withNull2)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(5),
         r.getDouble(6))).toSeq
     assert(nOut2 == Seq(("n", 2L, 2L, 1.0)))
@@ -4795,7 +4784,7 @@ class OperatorsSpec extends SparkSpec {
     val docs = Seq((2, 100L), (2, 100L), (1, 50L), (0, 1000L))
       .toDF("tier", "toks")
     val out = graft.operators.Sampling
-      .curriculumPlan(docs, col("tier"), col("toks"), budget = 1000L)
+      .curriculumPlan(docs, budget = 1000L)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5),
         if (r.isNullAt(6)) None else Some(r.getDouble(6)),
@@ -4854,7 +4843,7 @@ class OperatorsSpec extends SparkSpec {
       ("g", "aa aa aa aa aa aa aa aa"),
       ("g", null)).toDF("src", "text")
     val out = graft.operators.TextAnalysis
-      .entropyGate(docs, "src", "text")
+      .entropyGate(docs.withColumnRenamed("src", "source"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(3)))
     assert(out.toSeq == Seq(("g", 3L, 2L)))
   }
@@ -4869,8 +4858,8 @@ class OperatorsSpec extends SparkSpec {
     assert(TextAnalysis.diacritics.length
       == TextAnalysis.diacriticsFolded.length)
     def norm(t: String): String =
-      Seq(t).toDF("t")
-        .select(TextAnalysis.normalizeForDedup(col("t")))
+      Seq(t).toDF("text")
+        .select(TextAnalysis.normalizeForDedup)
         .collect()(0).getString(0)
     val base = "fast table scan over a value"
     assert(norm(base) == base)
@@ -4904,7 +4893,7 @@ class OperatorsSpec extends SparkSpec {
       (3L, "g2", "nothing shared here at all")).toDF(
       "doc_id", "grp", "text")
     val out = graft.operators.TextAnalysis
-      .repeatedSpanScrub(docs, "grp", "text", minDocs = 4L)
+      .repeatedSpanScrub(docs.withColumnRenamed("grp", "source"), minDocs = 4L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
     assert(out == Seq(
@@ -4917,9 +4906,9 @@ class OperatorsSpec extends SparkSpec {
     val ov = Seq(
       (1L, "g", "aaa bbb ccc ddd"), (2L, "g", "aaa bbb ccc ddd"),
       (3L, "g", "aaa bbb ccc ddd"), (4L, "g", "aaa bbb ccc ddd"))
-      .toDF("doc_id", "grp", "text")
+      .toDF("doc_id", "source", "text")
     val ovOut = graft.operators.TextAnalysis
-      .repeatedSpanScrub(ov, "grp", "text", minDocs = 4L)
+      .repeatedSpanScrub(ov, minDocs = 4L)
       .collect().map(r => (r.getLong(3), r.getLong(4))).toSeq
     assert(ovOut == Seq((16L, 16L)),
       "both trigrams are heavy; coverage is the union = all 4 positions")
@@ -4935,7 +4924,7 @@ class OperatorsSpec extends SparkSpec {
       ("en", "src_a", "abc def gha"),          // 11 chars, 3 toks
       ("xx", "src_z", null)).toDF("lang", "source", "text")
     val partials = graft.operators.TextAnalysis
-      .fertilityPartials(docs, "text")
+      .fertilityPartials(docs)
     val got = partials.collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3))).toSeq
@@ -4977,7 +4966,7 @@ class OperatorsSpec extends SparkSpec {
       ("g", "aa unique doc"),
       ("h", "solo doc")).toDF("grp", "text")
     val out = graft.operators.TextAnalysis
-      .templatePrefixes(docs, "grp", "text", prefixLen = 21, topK = 2)
+      .templatePrefixes(docs.withColumnRenamed("grp", "source"), prefixLen = 21, topK = 2)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2),
         r.getLong(3), r.getDouble(4))).toSeq
     assert(out == Seq(
@@ -4999,7 +4988,7 @@ class OperatorsSpec extends SparkSpec {
       Seq(("small", "a b c d e f g h i j"))
     val df = docs.toDF("source", "text")
     val out = graft.operators.Sampling
-      .temperatureMixture(df, "source",
+      .temperatureMixture(df,
         graft.operators.TextAnalysis.tokenCount(col("text")))
       .collect().map(r => (r.getDouble(0), r.getString(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSeq

@@ -257,7 +257,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p.take(2000))
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val raw = ranPlans(graft.operators.Sampling
-      .stratifiedSample(docs, "lang", "doc_id", 20))
+      .stratifiedSample(docs, 20))
     assert(raw.contains("BroadcastHashJoin"), raw.take(2000))
     assert(raw.contains("hashpartitioning(lang"), raw.take(2000))
     assert(!raw.contains("Exchange SinglePartition"), raw.take(2000))
@@ -472,7 +472,7 @@ class PlanAuditSpec extends SparkSpec {
     // the totals action AND the output), which hides its exchange; audit
     // the single token shuffle over every action the operator runs
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val raw = ranPlans(graft.operators.TextAnalysis.tokenDrift(docs, "text",
+    val raw = ranPlans(graft.operators.TextAnalysis.tokenDrift(docs,
       org.apache.spark.sql.functions.col("source") === "src0", minCount = 1L))
     assert("Exchange hashpartitioning\\(token".r.findAllIn(raw).size == 1,
       raw.take(3000))
@@ -550,7 +550,7 @@ class PlanAuditSpec extends SparkSpec {
     // sketch path (what touches the corpus): exactly one hash exchange on
     // the slice key, with a map-side partial KMinStringsAgg below it
     val ps = graft.operators.Overlap
-      .kmvSketch(docs, "lang", "text", 3, 256)
+      .kmvSketch(docs, 256)
       .queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(ps).size == 1, ps.take(3000))
     assert(ps.contains("partial_kminstringsagg"), ps.take(3000))
@@ -559,7 +559,7 @@ class PlanAuditSpec extends SparkSpec {
     // touches only the tiny sketch rows — no sort-merge join anywhere,
     // corpus never joins
     val pq = ranPlans(graft.operators.Overlap
-      .sliceOverlap(docs, "lang", "text", 3, 256)
+      .sliceOverlap(docs, 256)
       .orderBy(col("slice_a"), col("slice_b")))
     assert(!pq.contains("SortMergeJoin"), pq.take(3000))
     assert(!pq.contains("CartesianProduct"), pq.take(3000))
@@ -583,7 +583,7 @@ class PlanAuditSpec extends SparkSpec {
     // equi-join on w1/w2.
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val p = ranPlans(graft.operators.TextAnalysis
-      .pmiCollocations(docs, "text", 5L)
+      .pmiCollocations(docs, 5L)
       .orderBy(col("w1"), col("w2")))
     assert(!p.contains("CartesianProduct"), p.take(3000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
@@ -800,8 +800,7 @@ class PlanAuditSpec extends SparkSpec {
     // does not hide the corpus subplan
     import org.apache.spark.sql.functions.col
     val p = ranPlans(graft.operators.TextAnalysis
-      .cTfIdf(spark.read.parquet(s"$dir/documents.parquet"),
-        "source", "text", topK = 5)
+      .cTfIdf(spark.read.parquet(s"$dir/documents.parquet"), topK = 5)
       .orderBy(col("class"), col("rk")))
     assert(!p.contains("CartesianProduct"), p.take(3000))
     // the only nested-loop join is the 1-row avg-mass broadcast

@@ -225,7 +225,7 @@ class TransformPropertySpec extends SparkSpec {
       val rows = pts.zipWithIndex.map { case ((x, y), i) =>
         (i.toLong, x, y) }
       val got = graft.operators.TopK
-        .paretoFrontier(rows.toDF("id", "x", "y"), "id",
+        .paretoFrontier(rows.toDF("doc_id", "x", "y"),
           org.apache.spark.sql.functions.col("x"),
           org.apache.spark.sql.functions.col("y"))
         .collect().map(_.getLong(0)).toSet
@@ -247,7 +247,7 @@ class TransformPropertySpec extends SparkSpec {
     check(Prop.forAll(gen, Gen.oneOf(25, 50, 75, 90)) { (vw, p) =>
       val rows = vw.map { case (v, w) => ("k", v, w) }
       val got = graft.operators.Stats
-        .weightedQuantiles(rows.toDF("g", "v", "w"), "g", "v", "w",
+        .weightedQuantiles(rows.toDF("source", "v", "w"), "v", "w",
           Seq(p))
         .collect()(0).getLong(2)
       // sequential truth: smallest v whose cumulative weight reaches
@@ -327,7 +327,7 @@ class TransformPropertySpec extends SparkSpec {
     } yield (id, ng)
     check(Prop.forAll(gen) { case (id, ng) =>
       val env = Multimodal.decodeEnvelope(
-        Multimodal.envelopeWavFor(id, ng), 65).get
+        Multimodal.envelopeWavFor(id, ng)).get
       val bits = Multimodal.fixtureDHashBits(id, ng)
       val expect = (0 until 16).map { c =>
         val nib = (0 until 4).map(t => bits(4 * c + t) << (3 - t)).sum
@@ -380,7 +380,7 @@ class TransformPropertySpec extends SparkSpec {
       s"not idempotent: ${r.getString(0)}")
     // SnapshotDiff of a corpus against itself: everything 'unchanged'
     val docs = Seq(1L -> "a", 2L -> "b").toDF("doc_id", "text")
-    val d = SnapshotDiff.diff(docs, docs, "doc_id", "text").collect()
+    val d = SnapshotDiff.diff(docs, docs).collect()
     assert(d.length == 2 && d.forall(_.getString(1) == "unchanged"))
   }
 
@@ -403,7 +403,7 @@ class TransformPropertySpec extends SparkSpec {
       if (!rows.exists(_._1) || !rows.exists(!_._1)) true
       else {
         val df = rows.toDF("in_a", "text")
-        val kl = TextAnalysis.tokenDrift(df, "text", col("in_a"),
+        val kl = TextAnalysis.tokenDrift(df, col("in_a"),
             minCount = 1L)
           .agg(org.apache.spark.sql.functions.sum(col("kl_term")))
           .collect()(0).getDouble(0)
@@ -425,7 +425,7 @@ class TransformPropertySpec extends SparkSpec {
     } yield (toks, nb)
     check(Prop.forAll(gen) { case (toks, nb) =>
       def run(rows: Seq[(Long, String)]) = graft.operators.Stats
-        .cmsHeavyHitters(rows.toDF("batch", "token"), "token", "batch",
+        .cmsHeavyHitters(rows.toDF("batch", "token"),
           depth = 2, width = 4, minShare = 1e-9)
         .collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -446,7 +446,7 @@ class TransformPropertySpec extends SparkSpec {
     } yield (a, b)
     check(Prop.forAll(gen) { case (a, b) =>
       val r = graft.operators.Stats
-        .ksDrift(a.toDF("v"), b.toDF("v"), "v").collect()(0)
+        .ksDrift(a.toDF("sv"), b.toDF("sv")).collect()(0)
       val ks = r.getDouble(2)
       val expected = (a ++ b).distinct.map { v =>
         math.abs(a.count(_ <= v).toDouble / a.size

@@ -12,12 +12,12 @@ class RangeJoinSpec extends SparkSpec {
   // --- intervalJoin -------------------------------------------------------
 
   private def pointsDf(rows: Seq[(Long, Long, Long)]) =
-    rows.toDF("key", "p_id", "ts_s")
-      .select(col("key"), col("p_id"), timestamp_seconds(col("ts_s")).as("ts"))
+    rows.toDF("user_id", "p_id", "ts_s")
+      .select(col("user_id"), col("p_id"), timestamp_seconds(col("ts_s")).as("ts"))
 
   private def intervalsDf(rows: Seq[(Long, Long, Long, Long)]) =
-    rows.toDF("key", "i_id", "s_s", "e_s")
-      .select(col("key"), col("i_id"),
+    rows.toDF("user_id", "i_id", "s_s", "e_s")
+      .select(col("user_id"), col("i_id"),
         timestamp_seconds(col("s_s")).as("w_start"),
         timestamp_seconds(col("e_s")).as("w_end"))
 
@@ -33,11 +33,10 @@ class RangeJoinSpec extends SparkSpec {
     }
     val p = pointsDf(pts)
     val iv = intervalsDf(ivs)
-    val fast = RangeJoin.intervalJoin(p, iv, "key", "ts", "w_start", "w_end",
-        binSeconds = 600)
+    val fast = RangeJoin.intervalJoin(p, iv, binSeconds = 600)
       .select("p_id", "i_id").as[(Long, Long)].collect().toSet
-    val naive = p.join(iv.withColumnRenamed("key", "k2"),
-        col("key") === col("k2") &&
+    val naive = p.join(iv.withColumnRenamed("user_id", "k2"),
+        col("user_id") === col("k2") &&
           col("ts") >= col("w_start") && col("ts") <= col("w_end"))
       .select("p_id", "i_id").as[(Long, Long)].collect().toSet
     assert(fast == naive)
@@ -50,8 +49,7 @@ class RangeJoinSpec extends SparkSpec {
     val p = pointsDf(Seq((1L, 1L, 599L), (1L, 2L, 600L), (1L, 3L, 1200L),
       (1L, 4L, 1800L), (1L, 5L, 1801L), (2L, 6L, 700L)))
     val iv = intervalsDf(Seq((1L, 10L, 600L, 1800L)))
-    val got = RangeJoin.intervalJoin(p, iv, "key", "ts", "w_start", "w_end",
-        binSeconds = 600)
+    val got = RangeJoin.intervalJoin(p, iv, binSeconds = 600)
       .select("p_id", "i_id").as[(Long, Long)].collect()
     // exactly once per true pair (no dup from the interval's 3 bins), only
     // in-range points of the same key
@@ -61,8 +59,7 @@ class RangeJoinSpec extends SparkSpec {
   test("intervalJoin drops inverted intervals instead of fabricating bins") {
     val p = pointsDf(Seq((1L, 1L, 500L)))
     val iv = intervalsDf(Seq((1L, 10L, 900L, 100L))) // end < start
-    assert(RangeJoin.intervalJoin(p, iv, "key", "ts", "w_start", "w_end",
-      binSeconds = 600).count() == 0)
+    assert(RangeJoin.intervalJoin(p, iv, binSeconds = 600).count() == 0)
   }
 
   test("q109 plan: candidates route through a bin equi-join, no nested loop") {

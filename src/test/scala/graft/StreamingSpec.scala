@@ -138,8 +138,8 @@ class StreamingSpec extends SparkSpec {
           .dropDuplicatesWithinWatermark("digest")
         else digested.dropDuplicates("digest")
       deduped.select(col("doc_id"),
-        graft.operators.TextAnalysis.langId(col("text")).as("lang_pred"),
-        graft.operators.TextAnalysis.qualityScore(col("text")).as("q"),
+        graft.operators.TextAnalysis.langId.as("lang_pred"),
+        graft.operators.TextAnalysis.qualityScore.as("q"),
         graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tokens"),
         // the native BPE tokenizer is a stateless projection, so it runs
         // on a streaming frame unchanged — part of the differential
@@ -193,7 +193,7 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
       .writeStream.foreachBatch {
         (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val bIdx = Dedup.minhashIndex(batch, "doc_id", "text",
+          val bIdx = Dedup.minhashIndex(batch,
             bands = 4, fast = true)
           val old =
             if (new java.io.File(idxDir).exists) spark.read.parquet(idxDir)
@@ -209,7 +209,7 @@ class StreamingSpec extends SparkSpec {
         r.getDouble(2))).toSet
     val streamed = pairSet(spark.read.parquet(pairsDir))
     val full = pairSet(Dedup.minhashLshPairs(
-      (batch1 ++ batch2).toDF("doc_id", "text"), "doc_id", "text",
+      (batch1 ++ batch2).toDF("doc_id", "text"),
       bands = 4, threshold = 0.5, fast = true))
     assert(streamed.nonEmpty && streamed == full)
   }
@@ -294,12 +294,13 @@ class StreamingSpec extends SparkSpec {
           .dropDuplicatesWithinWatermark("canonical_url")
         else canon.dropDuplicates("canonical_url")
       // the struct key threads (doc_id, canonical_url) through the rule
-      // projection without a stream-stream self-join back
+      // projection, in the id column, without a stream-stream self-join
+      // back
       graft.operators.TextAnalysis.gopherRules(
           deduped.select(struct(col("doc_id"), col("canonical_url"))
-            .as("key"), col("text")), "key", "text")
-        .select(col("key.doc_id").as("doc_id"),
-          col("key.canonical_url").as("canonical_url"),
+            .as("doc_id"), col("text")))
+        .select(col("doc_id.doc_id").as("doc_id"),
+          col("doc_id.canonical_url").as("canonical_url"),
           col("n_words"), col("word_chars"), col("stop_cnt"),
           col("alpha_words"), col("symbol_cnt"), col("n_fail"), col("keep"))
     }
@@ -338,8 +339,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-chunk-stream").toString
     df.write.mode("overwrite").parquet(dir)
     val q = graft.operators.TextAnalysis
-      .chunkDocuments(spark.readStream.schema(df.schema).parquet(dir),
-        "doc_id", "text", chunkLen = 5, stride = 3)
+      .chunkDocuments(spark.readStream.schema(df.schema).parquet(dir), chunkLen = 5, stride = 3)
       .writeStream.outputMode("append")
       .format("memory").queryName("chunk_stream_out").start()
     q.processAllAvailable(); q.stop()
@@ -349,7 +349,7 @@ class StreamingSpec extends SparkSpec {
           r.getString(3))).toSeq
     val got = rows(spark.table("chunk_stream_out"))
     val batch = rows(graft.operators.TextAnalysis
-      .chunkDocuments(df, "doc_id", "text", chunkLen = 5, stride = 3))
+      .chunkDocuments(df, chunkLen = 5, stride = 3))
     assert(got.nonEmpty && got == batch)
   }
 
@@ -367,8 +367,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-cdc-stream").toString
     df.write.mode("overwrite").parquet(dir)
     val q = graft.operators.TextAnalysis
-      .cdcChunks(spark.readStream.schema(df.schema).parquet(dir),
-        "doc_id", "text", dupCounts = false)
+      .cdcChunks(spark.readStream.schema(df.schema).parquet(dir), dupCounts = false)
       .writeStream.outputMode("append")
       .format("memory").queryName("cdc_stream_out").start()
     q.processAllAvailable(); q.stop()
@@ -378,7 +377,7 @@ class StreamingSpec extends SparkSpec {
           r.getString(4))).toSeq
     val got = rows(spark.table("cdc_stream_out"))
     val batch = rows(graft.operators.TextAnalysis
-      .cdcChunks(df, "doc_id", "text", dupCounts = false))
+      .cdcChunks(df, dupCounts = false))
     assert(got.nonEmpty && got == batch)
   }
 
@@ -532,7 +531,7 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = (1 to 40).map(i => (i, if (i % 3 == 0) "a" else "b"))
-      .toDF("id", "g")
+      .toDF("id", "event_type")
     val dir = Files.createTempDirectory("graft-dp-stream").toString
     df.filter(col("id") <= 20).repartition(1)
       .write.mode("overwrite").parquet(dir)
@@ -540,7 +539,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("append").parquet(dir)
     val q = graft.operators.Stats
       .dpNoisyCounts(spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir), "g", epsilon = 1.0)
+        .option("maxFilesPerTrigger", 1).parquet(dir))
       .writeStream.outputMode("complete")
       .format("memory").queryName("dp_out").start()
     q.processAllAvailable(); q.stop()
@@ -548,7 +547,7 @@ class StreamingSpec extends SparkSpec {
       rows.map(r => r.getString(0) -> r.getDouble(1)).toMap
     val streamed = toMap(spark.table("dp_out").collect().toSeq)
     val batch = toMap(graft.operators.Stats
-      .dpNoisyCounts(df, "g", epsilon = 1.0).collect().toSeq)
+      .dpNoisyCounts(df).collect().toSeq)
     assert(streamed == batch && batch.size == 2)
   }
 
@@ -662,7 +661,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.table("au_out").collect()
       .map(r => (r.getDate(0).toString, r.getLong(1))).toMap
     val batch = graft.operators.TimeSeries
-      .activeUsers(df, "ts", "u")
+      .activeUsers(df.withColumnRenamed("u", "user_id"))
       .collect().map(r => (r.getDate(0).toString, r.getLong(2))).toMap
     // every day the batch operator reports must carry the identical WAU
     for ((d, w) <- batch) assert(streamed.get(d).contains(w), d)

@@ -1,30 +1,41 @@
 #!/usr/bin/env python3
-"""List the defaulted parameters of the Scala `def`s under a directory
-with the values their callers give them.
+"""List the parameters of the Scala `def`s and class constructors under a
+directory with the values their callers give them.
 
-    python3 tools/param_values.py src/main/scala/graft/operators
+    python3 tools/param_values.py src/main/scala/graft
 
-For every defaulted parameter of a `def` under the directory, the
-effective value at each call site is the argument text the call passes
-(positional or named, whitespace collapsed), or the default when the
-call passes nothing. A call that forwards a variable counts that
-variable's name as its value, unless the last `val` of that name before
-the call in the same file binds a literal (`val maxHamming = 3`): then
-the literal is the value. Call sites are `Obj.name(` anywhere, where
-`Obj` is the object or class the def sits in, and a bare `name(` in the
-def's own file. Main call sites are those in `src/main` and
-`perfbench/src`; test call sites those in `src/test`.
+For every parameter of a `def` or of a (non-case) class constructor under
+the directory, the effective value at each call site is the argument
+text the call passes (positional or named, whitespace collapsed), or the
+default when the call passes nothing. A call that forwards a variable
+counts that variable's name as its value, unless the last `val` of that
+name before the call in the same file binds a literal (`val maxHamming =
+3`): then the literal is the value. Call sites are `Obj.name(` anywhere,
+where `Obj` is the object or class the def sits in, a bare `name(` in the
+def's own file or in a file that imports `Obj._` (or names it in an
+`import Obj.{...}`), and `new Name(` for a constructor. Main call sites
+are those in `src/main` and `perfbench/src`; test call sites those in
+`src/test`. A literal is an expression of literals, capitalised names
+(`Dedup.MaxHamming`, `Seq`) and `col`/`lit`; a variable is none.
 
 Two sections are printed:
 
-  constant     one value at every main call, and no test passes another:
-               the parameter can become a constant in the body;
-  path switch  a Boolean with one value at every main call, where a test
-               passes the other side (or a variable): the other side is a
-               path no query runs.
+  constant  one literal at every main call (or the default at every
+            one), and no test passes another: the parameter can become a
+            constant in the body;
+  kept      one value at every main call, or `Some` at every one, but the
+            parameter stays, for the tagged reason:
+              tests vary it   a test passes another value;
+              path switch     a Boolean or `Option` whose other side (or
+                              `None`) only tests run;
+              perfbench       `perfbench/src` calls it, so its signature
+                              stays;
+              SQL facade      a `GraftFunctions` def, which mirrors a SQL
+                              function's argument list;
+              oracle builder  a `SqlHelpers` def, the DuckDB reference.
 
 A def no main code calls is not listed (see the front-door rule). The last
-line counts the defaulted parameters found. Standard library only.
+line counts the parameters found. Standard library only.
 """
 import os
 import re
@@ -45,7 +56,8 @@ def scala_files(dirs):
 
 def blank_comments(src):
     """Return (code, in_string): comments become spaces (offsets kept),
-    and in_string marks the characters inside string or char literals."""
+    and in_string marks the characters inside string or char literals,
+    except the `${...}` and `$name` splices of an interpolated string."""
     out = list(src)
     in_str = bytearray(len(src))
     i, n = 0, len(src)
@@ -63,21 +75,8 @@ def blank_comments(src):
                 if out[k] != "\n":
                     out[k] = " "
             i = j
-        elif src.startswith('"""', i):
-            j = src.find('"""', i + 3)
-            j = n if j < 0 else j + 3
-            while j < n and src[j] == '"':
-                j += 1
-            for k in range(i + 1, j - 1):
-                in_str[k] = 1
-            i = j
         elif src[i] == '"':
-            j = i + 1
-            while j < n and src[j] != '"' and src[j] != "\n":
-                j += 2 if src[j] == "\\" else 1
-            for k in range(i + 1, min(j, n)):
-                in_str[k] = 1
-            i = j + 1
+            i = string_end(src, in_str, i)
         elif src[i] == "'" and i + 2 < n and (src[i + 2] == "'" or
                                                (src[i + 1] == "\\" and src[i + 3:i + 4] == "'")):
             j = src.find("'", i + 2 if src[i + 1] != "\\" else i + 3)
@@ -87,6 +86,47 @@ def blank_comments(src):
         else:
             i += 1
     return "".join(out), in_str
+
+
+def string_end(src, in_str, i):
+    """src[i] opens a string literal: mark its characters in in_str and
+    return the index just past it. An interpolated string (`s"..."`)
+    leaves its `${...}` and `$name` splices unmarked: they are code."""
+    n = len(src)
+    triple = src.startswith('"""', i)
+    interp = i > 0 and (src[i - 1].isalnum() or src[i - 1] == "_")
+    j = i + (3 if triple else 1)
+    while j < n:
+        if triple and src.startswith('"""', j):
+            while j + 3 < n and src[j + 3] == '"':
+                in_str[j] = 1
+                j += 1
+            return j + 3
+        if not triple and src[j] in '"\n':
+            return j + 1
+        if interp and src.startswith("$$", j):
+            in_str[j] = in_str[j + 1] = 1
+            j += 2
+        elif interp and src.startswith("${", j):
+            j += 2
+            depth = 0
+            while j < n and (src[j] != "}" or depth):
+                if src[j] == '"':
+                    j = string_end(src, in_str, j)
+                    continue
+                depth += {"{": 1, "}": -1}.get(src[j], 0)
+                j += 1
+            j += 1
+        elif interp and src[j] == "$" and (src[j + 1:j + 2].isalpha() or src[j + 1:j + 2] == "_"):
+            j += 1
+            while j < n and (src[j].isalnum() or src[j] == "_"):
+                j += 1
+        else:
+            in_str[j] = 1
+            j += 2 if src[j] == "\\" and not triple else 1
+            if j - 1 < n:
+                in_str[j - 1] = 1
+    return n
 
 
 def group_end(code, in_str, i):
@@ -164,19 +204,29 @@ def param_groups(code, in_str, i):
 
 
 DEF_RE = re.compile(r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)\s*(\[[^\]\n]*\])?\s*(?=\()")
+CLASS_RE = re.compile(r"(?<![A-Za-z0-9_])(case\s+)?class\s+([A-Za-z_][A-Za-z0-9_]*)\s*"
+                      r"(\[[^\]\n]*\])?\s*(?:private\s*(?:\[[a-z]+\]\s*)?)?(?=\()")
 OWNER_RE = re.compile(r"\b(?:object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)")
+
+# owners whose signatures are front doors or references, not knobs
+KEPT_OWNERS = {"GraftFunctions": "SQL facade", "SqlHelpers": "oracle builder"}
 
 
 class Def:
-    def __init__(self, path, line, owner, name, lists):
+    def __init__(self, path, line, owner, name, lists, ctor):
         self.path, self.line, self.owner, self.name = path, line, owner, name
-        # lists: [[(param, default or None), ...], ...]
+        # lists: [[(param, type, default or None), ...], ...]
         self.lists = lists
-        self.start = 0
+        self.ctor = ctor
 
-    def defaulted(self):
-        return [(li, pi, p, d) for li, ps in enumerate(self.lists)
-                for pi, (p, d) in enumerate(ps) if d is not None]
+    def params(self):
+        return [(li, p, t, d) for li, ps in enumerate(self.lists)
+                for p, t, d in ps]
+
+    def arity_ok(self, n_args):
+        ps = self.lists[0] if self.lists else []
+        required = sum(1 for _, _, d in ps if d is None)
+        return required <= n_args <= len(ps) or (n_args == 0 and not ps)
 
 
 def owner_at(code, pos):
@@ -200,6 +250,28 @@ def owner_at(code, pos):
     return best
 
 
+def parse_lists(code, in_str, groups):
+    lists = []
+    for lo, hi in groups:
+        parts = split_top(code, in_str, lo, hi)
+        if parts and re.match(r"\s*implicit\b", parts[0]):
+            break
+        ps = []
+        for part in parts:
+            part = re.sub(r"^\s*((private|protected)(\[[a-z]+\])?\s+)?((override\s+)?(val|var)\s+)?",
+                          "", part)
+            colon = part.find(":")
+            if colon < 0:
+                continue
+            name = part[:colon].strip()
+            rest = part[colon + 1:]
+            eq = top_level_eq(rest)
+            typ = norm(rest[:eq] if eq >= 0 else rest)
+            ps.append((name, typ, norm(rest[eq + 1:]) if eq >= 0 else None))
+        lists.append(ps)
+    return lists
+
+
 def parse_defs(path):
     src = open(path, encoding="utf-8", errors="replace").read()
     code, in_str = blank_comments(src)
@@ -207,42 +279,79 @@ def parse_defs(path):
     for m in DEF_RE.finditer(code):
         if in_str[m.start()]:
             continue
-        groups, end = param_groups(code, in_str, m.end())
-        lists = []
-        for lo, hi in groups:
-            ps = []
-            for part in split_top(code, in_str, lo, hi):
-                part = re.sub(r"^\s*(implicit\s+)?((val|var)\s+)?", "", part)
-                colon = part.find(":")
-                if colon < 0:
-                    continue
-                name = part[:colon].strip()
-                rest = part[colon + 1:]
-                eq = top_level_eq(rest)
-                ps.append((name, norm(rest[eq + 1:]) if eq >= 0 else None))
-            lists.append(ps)
-        d = Def(path, code.count("\n", 0, m.start()) + 1,
-                owner_at(code, m.start()), m.group(1), lists)
-        d.start = m.start()
-        defs.append(d)
-    return defs
+        groups, _ = param_groups(code, in_str, m.end())
+        defs.append(Def(path, code.count("\n", 0, m.start()) + 1,
+                        owner_at(code, m.start()), m.group(1),
+                        parse_lists(code, in_str, groups), False))
+    for m in CLASS_RE.finditer(code):
+        if in_str[m.start()] or m.group(1):
+            continue  # a case class is a record: its fields are data, not knobs
+        groups, _ = param_groups(code, in_str, m.end())
+        defs.append(Def(path, code.count("\n", 0, m.start()) + 1,
+                        m.group(2), m.group(2),
+                        parse_lists(code, in_str, groups), True))
+    return [d for d in defs if d.params()]
 
 
 LITERAL_RE = re.compile(r'-?[0-9][0-9_]*(\.[0-9]+)?[LlDdFf]?|true|false|"[^"\\\n]*"')
 IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*$")
+LITERAL_NAMES = {"true", "false", "col", "lit"}
+
+
+def is_literal(v):
+    """An expression of literals: its only lower-case names are `true`,
+    `false`, `col`, `lit`, a number suffix or a member selected with `.`."""
+    s = re.sub(r'"(?:[^"\\\n]|\\.)*"', '""', v)
+    s = re.sub(r"'(?:[^'\\\n]|\\.)'", "''", s)
+    if re.search(r'[A-Za-z0-9_]""', s) or "=>" in s:
+        return False  # an interpolated string or a function
+    for m in re.finditer(r"(?<![A-Za-z0-9_])([A-Za-z_][A-Za-z0-9_]*)", s):
+        name = m.group(1)
+        before = s[:m.start()].rstrip()
+        if name in LITERAL_NAMES or name[0].isupper() or before.endswith("."):
+            continue
+        return False
+    return True
+
+
+def column_shape(v):
+    """The shape of a column-name argument: ("name", 1) for `"c"`,
+    ("col", 1) for `col("c")`, ("seq", n) for `Seq("a", ...)` of n string
+    literals; None for anything else."""
+    lit = r'"[A-Za-z_][A-Za-z0-9_]*"'
+    if re.fullmatch(lit, v):
+        return ("name", 1)
+    if re.fullmatch(r"col\(%s\)" % lit, v):
+        return ("col", 1)
+    m = re.fullmatch(r"Seq\((%s(?:, %s)*)\)" % (lit, lit), v)
+    return ("seq", m.group(1).count(",") + 1) if m else None
+
+
+def shares_column(d, got, param, mv, test_vals):
+    """Another parameter of d reads the same column mv at every main call
+    while tests give the two different columns: the tests then exercise
+    two columns where the query reads one, which is more than a name."""
+    for li, p, _, _ in d.params():
+        other = got[(li, p)]
+        if p != param and set(other["main"]) == {mv} and \
+                set(other["test"]) != test_vals:
+            return True
+    return False
 
 
 def resolve_local(code, pos, value):
     """value, or the literal that the last `val <value> = ...` before pos
-    binds when value is a bare name and that binding is one literal."""
+    binds when value is a bare name and that binding is one literal. A
+    parameter or lambda binding of the name after that `val` shadows it."""
     if not IDENT_RE.match(value) or value in ("true", "false"):
         return value
     last = None
-    val_re = re.compile(r"\bval\s+" + re.escape(value) +
-                        r"\s*(?::[^=\n]*)?=(?![=>])([^\n]*)")
-    for m in val_re.finditer(code, 0, pos):
+    bind_re = re.compile(r"\bval\s+" + re.escape(value) +
+                         r"\s*(?::[^=\n]*)?=(?![=>])([^\n]*)|[(,]\s*" +
+                         re.escape(value) + r"\s*(?::(?!:)|=>)")
+    for m in bind_re.finditer(code, 0, pos):
         last = m
-    if last is not None:
+    if last is not None and last.group(1) is not None:
         rhs = last.group(1).strip()
         if LITERAL_RE.fullmatch(rhs):
             return rhs
@@ -250,35 +359,57 @@ def resolve_local(code, pos, value):
 
 
 def call_values(d, code, in_str, lo_call):
-    """Effective values of d's defaulted parameters at the call whose
-    argument groups start at code[lo_call]; None if it is no call."""
+    """Effective values of d's parameters at the call whose argument
+    groups start at code[lo_call]; None if it is no call of d. A
+    parameter of an argument list the call does not pass has no value."""
     groups, _ = param_groups(code, in_str, lo_call)
     groups = groups[:len(d.lists)]
     if not groups:
         return None
     vals = {}
     for li, ps in enumerate(d.lists):
-        names = [p for p, _ in ps]
+        if li >= len(groups):
+            break
+        names = [p for p, _, _ in ps]
+        lo, hi = groups[li]
+        args = split_top(code, in_str, lo, hi)
+        if li == 0 and not d.arity_ok(len(args)):
+            return None
         given = {}
-        if li < len(groups):
-            lo, hi = groups[li]
-            for k, arg in enumerate(split_top(code, in_str, lo, hi)):
-                m = re.match(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*=(?![=>])", arg)
-                if m and m.group(1) in names:
-                    given[m.group(1)] = resolve_local(code, lo, norm(arg[m.end():]))
-                elif k < len(names):
-                    given[names[k]] = resolve_local(code, lo, norm(arg))
-        for p, dflt in ps:
-            if dflt is not None:
-                vals[(li, p)] = given.get(p, dflt)
+        for k, arg in enumerate(args):
+            m = re.match(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s*=(?![=>])", arg)
+            if m and m.group(1) in names:
+                given[m.group(1)] = resolve_local(code, lo, norm(arg[m.end():]))
+            elif k < len(names):
+                given[names[k]] = resolve_local(code, lo, norm(arg))
+        for p, _, dflt in ps:
+            v = given.get(p, dflt)
+            if v is not None:
+                vals[(li, p)] = v
     return vals
+
+
+def imported_owners(code):
+    """Owner -> names (None = all) that `import ... Owner._` or
+    `import ... Owner.{a, b}` brings into scope in this file."""
+    out = {}
+    for m in re.finditer(r"\bimport\s+(?:[A-Za-z0-9_]+\.)*([A-Za-z0-9_]+)\.(_|\{[^}]*\})", code):
+        if m.group(2) == "_":
+            out[m.group(1)] = None
+        else:
+            names = {re.split(r"\s*=>\s*", x.strip())[0] for x in m.group(2)[1:-1].split(",")}
+            if "_" in names:
+                out[m.group(1)] = None
+            elif out.get(m.group(1), set()) is not None:
+                out.setdefault(m.group(1), set()).update(names)
+    return out
 
 
 def main():
     if len(sys.argv) != 2:
         sys.exit(__doc__)
     target = sys.argv[1].rstrip("/")
-    defs = [d for f in scala_files([target]) for d in parse_defs(f) if d.defaulted()]
+    defs = [d for f in scala_files([target]) for d in parse_defs(f)]
     by_name = defaultdict(list)
     for d in defs:
         by_name[d.name].append(d)
@@ -286,56 +417,86 @@ def main():
     # values[def][(list, param)] = {"main": {value: count}, "test": {...}}
     values = {id(d): defaultdict(lambda: {"main": defaultdict(int),
                                           "test": defaultdict(int)}) for d in defs}
+    perfbench_calls = set()
     names_alt = "|".join(sorted(map(re.escape, by_name), key=len, reverse=True))
     if not names_alt:
         return
-    call_re = re.compile(r"(?<![A-Za-z0-9_])(?:([A-Za-z_][A-Za-z0-9_]*)\s*\.\s*)?(" +
-                         names_alt + r")\s*(?=\()")
+    call_re = re.compile(r"(?<![A-Za-z0-9_.])(?:(new)\s+(?:[a-z][A-Za-z0-9_]*\.)*|"
+                         r"(?:[a-z][A-Za-z0-9_]*\s*\.\s*)*([A-Za-z_][A-Za-z0-9_]*)\s*\.\s*)?(" +
+                         names_alt + r")\s*(?:\[[^\]\n]*\])?\s*(?=\()")
     for side, dirs in (("main", MAIN_DIRS), ("test", TEST_DIRS)):
         for path in scala_files(dirs):
             src = open(path, encoding="utf-8", errors="replace").read()
             code, in_str = blank_comments(src)
+            imports = imported_owners(code)
             for m in call_re.finditer(code):
-                if in_str[m.start(2)]:
+                if in_str[m.start(3)]:
                     continue
-                if re.search(r"\bdef\s+$", code[max(0, m.start() - 20):m.start()]):
+                if re.search(r"\b(def|class)\s+$", code[max(0, m.start() - 20):m.start()]):
                     continue
-                qual, name = m.group(1), m.group(2)
+                new, qual, name = m.group(1), m.group(2), m.group(3)
                 for d in by_name[name]:
+                    if d.ctor != bool(new):
+                        continue
                     if qual is not None and qual != d.owner:
                         continue
-                    if qual is None and os.path.abspath(path) != os.path.abspath(d.path):
-                        continue
+                    if qual is None and not d.ctor and \
+                            os.path.abspath(path) != os.path.abspath(d.path):
+                        scope = imports.get(d.owner, set())
+                        if scope is not None and name not in scope:
+                            continue
                     vals = call_values(d, code, in_str, m.end())
                     if vals is None:
                         continue
+                    if path.startswith("perfbench/"):
+                        perfbench_calls.add(id(d))
                     for key, v in vals.items():
                         values[id(d)][key][side][v] += 1
 
-    constant, switch = [], []
-    total = 0
+    constant, kept = [], []
+    total = defaulted = 0
     for d in defs:
-        for li, _, p, dflt in d.defaulted():
+        for li, p, typ, dflt in d.params():
             total += 1
+            defaulted += dflt is not None
             got = values[id(d)][(li, p)]
             main_vals, test_vals = set(got["main"]), set(got["test"])
-            if len(main_vals) != 1:
+            is_option = typ.startswith("Option[")
+            all_some = is_option and main_vals and all(v.startswith("Some(") for v in main_vals)
+            if len(main_vals) != 1 and not all_some:
                 continue
-            (mv,) = main_vals
-            row = "%s:%d %s.%s %s = %s  main: %s (%d calls)  test: %s" % (
-                d.path, d.line, d.owner, d.name, p, dflt, mv, got["main"][mv],
+            mv = sorted(main_vals)[0]
+            if len(main_vals) == 1 and not (is_literal(mv) or mv == dflt):
+                continue  # a forwarded variable: its source is the knob
+            row = "%s:%d %s.%s %s%s  main: %s (%d calls)  test: %s" % (
+                d.path, d.line, d.owner, d.name, p,
+                "" if dflt is None else " = " + dflt,
+                " | ".join(sorted(main_vals)), sum(got["main"].values()),
                 ", ".join(sorted(test_vals)) or "-")
-            if test_vals <= main_vals:
+            if d.owner in KEPT_OWNERS:
+                kept.append("[%s] %s" % (KEPT_OWNERS[d.owner], row))
+            elif id(d) in perfbench_calls:
+                kept.append("[perfbench] " + row)
+            elif all_some and len(main_vals) > 1:
+                kept.append("[path switch] " + row)
+            elif test_vals <= main_vals and not all_some:
                 constant.append(row)
-            elif mv in ("true", "false") and dflt in ("true", "false"):
-                switch.append(row)
+            elif column_shape(mv) and all(column_shape(v) == column_shape(mv)
+                                          for v in test_vals) and \
+                    not shares_column(d, values[id(d)], p, mv, test_vals):
+                constant.append(row + "  [test fixture names]")
+            elif mv in ("true", "false") or all_some:
+                kept.append("[path switch] " + row)
+            else:
+                kept.append("[tests vary it] " + row)
     print("constant (%d)" % len(constant))
     for r in constant:
         print("  " + r)
-    print("path switch (%d)" % len(switch))
-    for r in switch:
+    print("kept (%d)" % len(kept))
+    for r in sorted(kept):
         print("  " + r)
-    print("%d defaulted parameters in %s" % (total, target))
+    print("%d parameters (%d defaulted, %d required) in %s" % (
+        total, defaulted, total - defaulted, target))
 
 
 if __name__ == "__main__":

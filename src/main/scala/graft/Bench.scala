@@ -4,92 +4,90 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main. One JSON line on stdout (and a file-backed twin at
-  * `.bench/last_run.json`), followed by a <500-byte summary line (totals
-  * and counts only) so a tail-truncating capture still gets parseable
-  * JSON: best-of-N per-query seconds at the graded sf dir, a 10x-row
-  * scale probe, and — when a ScaleUp output exists — an sf1-class pass.
+  * `.bench/last_run.json`), then chunk lines carrying slices of the graded
+  * map, then a <500-byte summary line (totals and counts only), so a
+  * capture that keeps only the stdout tail still gets parseable JSON: the
+  * warm min-of-2 per-query seconds at the graded sf dir and, when a
+  * ScaleUp output exists, an sf1-class pass.
   *
-  * Round-6 postmortem hardening (kept):
-  *  - A FAILED query pass records NOTHING into the per-query min. When a
-  *    driver timeout shut the SparkContext down mid-pass, every remaining
-  *    query "ran" in ~5 ms as an instant failure and min-of-N preferred
-  *    that over the real pass-1 time — 177/299 large entries were
-  *    garbage. Failures land in an `errors` map instead, and the suite
-  *    loop aborts outright once the context is stopped.
-  *  - Pass 1 at the graded sf dir always runs to completion and is
-  *    checkpointed to the twin file IMMEDIATELY, so a kill can never cost
-  *    the graded map again.
-  *
-  * Round-7 postmortem hardening (this file's diff):
-  *  - LEAST-RECENTLY-CERTIFIED ordering for the sf1-class pass. Round 6
-  *    and 7 both executed it in sorted name order, so every deadline
-  *    abort starved the SAME lexicographic tail (q30–q99: 70 queries
-  *    never certified at sf1 across two rounds). The pass now orders by
-  *    (last run certified ascending, projected cost ascending) against a
-  *    history file (`.bench/large_cert_history.tsv`), so whatever a
-  *    deadline cuts is whatever was certified most recently — no family
-  *    can starve twice.
-  *  - PROJECTED-COST deadline: round 7 overran its own budget
-  *    (elapsed 1723 s > 1650) because the deadline was only checked
-  *    between queries — the in-flight query ran past it. The loop now
-  *    skips a query whose projected cost (history, else graded-time ×
-  *    large factor) does not fit before the deadline, and a reserve
-  *    (default 60 s) keeps final serialization inside the budget.
-  *  - GC-AWARE timing: round 7's single-pass large numbers were up to
-  *    94× inflated (q26 recorded 77.7 s vs 0.83 s warm) because tenured
-  *    garbage from a preceding heavy query was collected inside the next
-  *    query's timed window. Each timed run now records its STW GC
-  *    fraction; a run whose GC fraction exceeds `gcRetryFrac` is re-run
-  *    (min-of-attempts, deadline-guarded) and entries still above 0.25
-  *    are annotated in the JSON (`gcf`/`gcf_large`) so a reader can
-  *    discount what the retry could not save.
-  *  - An untimed warm-up query runs before graded pass 1 so the first
-  *    timed query no longer absorbs JVM/classloader start-up (round 7:
-  *    q01 "8.5 s" was simply the first query ever executed), keeping the
-  *    headline total comparable across rounds.
+  * Invariants:
+  *  - A failed attempt records no time. Its error lands in an `errors`
+  *    map, and the suite aborts once the SparkContext is stopped: a
+  *    stopped context makes every later query "run" in ~5 ms, which a
+  *    min would prefer over the real time.
+  *  - Graded pass 1 has no deadline and is checkpointed to the twin file
+  *    as soon as it ends, so a kill can never cost the graded map.
+  *  - After graded pass 1, nothing starts that does not fit before the
+  *    deadline ([[BudgetS]] minus [[ReserveS]]): the deadline is checked
+  *    between queries, so a query whose projected cost does not fit is
+  *    skipped, not started.
+  *  - The sf1-class pass runs least-recently-certified first against the
+  *    tracked history `.bench/large_cert_history.tsv`, so whatever a
+  *    deadline cuts was certified most recently and no query starves
+  *    twice (sorted name order starved the same tail every run).
+  *  - A recorded sf1 entry is a warm back-to-back min-of-2 carrying its
+  *    scaling certificate (sf1 seconds / graded seconds).
+  *  - A run whose stop-the-world GC fraction exceeds [[GcRetryFrac]] is
+  *    re-run: tenured garbage of a preceding heavy query collected in
+  *    this query's window inflated single runs up to 94x. Entries still
+  *    above 0.25 are annotated (`gcf`/`gcf_large`) so a reader can
+  *    discount them.
+  *  - An untimed warm-up query runs before graded pass 1, so JVM and
+  *    classloader start-up land in no query's time.
   */
 object Bench {
+
+  /** Wall-clock budget of the whole run, seconds. The driver wraps the
+    * bench in its own hard timeout (which once left no JSON at all);
+    * finishing inside this budget is what guarantees an rc=0 artifact. */
+  private val BudgetS = 1650.0
+
+  /** Seconds kept free at the end of the budget for the in-flight query
+    * and the final serialization. */
+  private val ReserveS = 60.0
+
+  /** A successful run over 1 s whose stop-the-world GC fraction exceeds
+    * this is re-run (see [[runSuite]]). */
+  private val GcRetryFrac = 0.5
+
+  /** Projected sf1-class cost over graded time for a query without
+    * history (see [[largeEstimate]]). */
+  private val LargeFactor = 2.5
+
+  /** Back-to-back attempts behind each recorded sf1 entry: the stamps
+    * steer tier decisions from the tracked history, and a single run at
+    * the contended end of the budget stamped up to 4.9x its warm min. */
+  private val LargeMin = 2
 
   /** Accumulated stop-the-world GC milliseconds across all collectors. */
   private def gcMillis: Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
 
-  /** Run `nRuns` interleaved passes of `names` against `dir`, folding each
-    * SUCCESSFUL pass's wall-clock into the per-query min in `acc`. A
-    * failed pass is not a measurement: it records the error message into
-    * `errors` and leaves `acc` untouched. Returns false — abandoning any
-    * remaining work — when the SparkContext has been stopped or
-    * `deadlineNanos` has passed; per-query entries already recorded stay
-    * valid either way. Also returns false (after finishing the loop) when
-    * any query was SKIPPED because its projected cost (`estimate(name)`,
-    * seconds) did not fit before the deadline: a skip means the suite is
-    * not complete, but unlike an abort it lets every query that still
-    * fits get its entry. A successful run whose stop-the-world GC
-    * fraction exceeds `gcRetryFrac` is re-run (up to 2 retries, each
-    * projected against the deadline) — tenured garbage from a PRECEDING
-    * query collected inside this query's timed window is noise, and the
-    * retry prices the query once that debt is paid. `gcf` receives the GC
-    * fraction of the attempt that provided each recorded min.
-    * `onRecorded` fires after each query whose min was created or
-    * improved (outside every timed window) — the checkpoint hook that
-    * lets a caller persist partial results so an EXTERNAL kill (the
-    * driver's hard timeout, round 6's rc=124) cannot erase a pass's
-    * recorded entries or the certification stamps they carry.
-    * `minAttempts` > 1 makes every query a back-to-back min-of-N — the
-    * round-11 postmortem fix for the sf1 section: with graded pass 2
-    * (correctly) running first, the single-pass large section landed on
-    * the contended end of the budget and stamped COLD numbers into the
-    * git-tracked rotation history (q307 recorded 54.4 s vs 11.2 s
-    * isolated warm min-of-2) — exactly the pollution the graded map was
-    * cured of a round earlier. Attempt 2 re-runs warm immediately, so a
-    * stamp is a warm min, not a cold draw; the projected-cost gate
-    * prices the query at minAttempts × estimate so a query whose TWO
-    * runs don't fit is skipped whole (a one-attempt cold stamp is the
-    * disease, not a fallback). */
+  /** Run `names` once against `dir`, folding each successful attempt's
+    * wall-clock into the per-query min in `acc`.
+    *  - A failed attempt records no time. Its message goes to `errors`
+    *    unless the query already holds a min (the two maps stay
+    *    disjoint), and a later success removes it.
+    *  - Returns false, abandoning the remaining work, once the
+    *    SparkContext is stopped or `deadlineNanos` has passed; entries
+    *    already recorded stay valid.
+    *  - A query whose projected cost (`minAttempts` x `estimate(name)`,
+    *    seconds) does not fit before the deadline is skipped and the
+    *    queries behind it still run; the result is then false too.
+    *  - A successful run over 1 s whose GC fraction exceeds
+    *    [[GcRetryFrac]] is re-run (up to 2 retries, while retrying helps):
+    *    garbage a preceding query left is noise in this query's window.
+    *    `gcf` receives the GC fraction of the attempt behind each min.
+    *  - With `minAttempts` > 1 every query runs back-to-back that many
+    *    times and keeps the warm min. A query with fewer successful
+    *    attempts rolls back to its prior entry and counts as a skip: a
+    *    cold first attempt measured up to 4.9x its warm min.
+    *  - `onRecorded` fires after each query whose min was created or
+    *    improved, outside every timed window: the checkpoint hook that
+    *    lets a caller persist partial results before an external kill. */
   def runSuite(spark: SparkSession, dir: String, names: Seq[String],
                queries: Map[String, (SparkSession, String) => DataFrame],
-               nRuns: Int,
                acc: mutable.Map[String, Double],
                errors: mutable.Map[String, String],
                deadlineNanos: Long = Long.MaxValue,
@@ -97,11 +95,10 @@ object Bench {
                label: String = "suite",
                gcf: mutable.Map[String, Double] = mutable.Map(),
                estimate: String => Double = _ => 0.0,
-               gcRetryFrac: Double = 1.0,
                onRecorded: String => Unit = _ => (),
                minAttempts: Int = 1): Boolean = {
     var skippedProjected = false
-    for (pass <- 1 to nRuns; name <- names) {
+    for (name <- names) {
       if (spark.sparkContext.isStopped) {
         System.err.println(s"[bench] ABORT $label: SparkContext stopped")
         return false
@@ -142,8 +139,8 @@ object Bench {
                 // queries/errors stay DISJOINT: a query with a recorded
                 // min is certified — a later failed attempt (GC retry,
                 // pass 2) must not also list it in `errors`, or a reader
-                // applying the round-6 rule "failures land in errors"
-                // misreads a certified entry as failed
+                // taking `errors` as the failed set misreads a certified
+                // entry as failed
                 val msg =
                   Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
                 if (!acc.contains(name)) errors(name) = msg
@@ -174,7 +171,7 @@ object Bench {
           // fraction high is intrinsically GC-bound, and re-running it
           // just re-prices the same work
           retry = ok && (attempts < minAttempts ||
-            (dt > 1.0 && gcFrac > gcRetryFrac &&
+            (dt > 1.0 && gcFrac > GcRetryFrac &&
               (attempts == 1 || dt < 0.8 * lastDt)))
           lastDt = dt
         }
@@ -216,8 +213,8 @@ object Bench {
         // eviction pressure in suite mode (untimed, like a real pipeline's
         // end-of-job unpersist). BLOCKING: async eviction overlapped the
         // NEXT query's timed window and polluted cheap queries' numbers
-        // (the r5 q67 anomaly); the eviction cost belongs outside every
-        // timed region.
+        // (q67 read 2.34 s in the suite vs 0.57 s alone); the eviction
+        // cost belongs outside every timed region.
         if (!spark.sparkContext.isStopped)
           try spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = true))
@@ -269,7 +266,7 @@ object Bench {
     * can carry old noise (round 7's single-pass numbers were up to 94×
     * inflated, and a stale 77.7 s estimate gated out a query that really
     * costs 0.6 s) while the large dir is ~10× rows and anything scaling
-    * worse is tiered; without history, graded × largeFactor.
+    * worse is tiered; without history, graded × [[LargeFactor]].
     *
     * The cap exists only to heal stale-history NOISE against a trusted
     * graded signal. A query with NO graded time (it failed or was
@@ -280,11 +277,11 @@ object Bench {
     * gate and overrun the deadline by more than the run reserve. A rare
     * underestimate can overrun the deadline by at most that one query,
     * which the reserve absorbs. */
-  def largeEstimate(hist: Map[String, Cert], graded: String => Option[Double],
-                    largeFactor: Double)(n: String): Double =
+  def largeEstimate(hist: Map[String, Cert],
+                    graded: String => Option[Double])(n: String): Double =
     graded(n) match {
       case Some(g) =>
-        val fallback = g * largeFactor
+        val fallback = g * LargeFactor
         hist.get(n)
           .map(c => math.min(c.seconds * 1.15, math.max(g * 8.0, fallback)))
           .getOrElse(fallback)
@@ -329,16 +326,9 @@ object Bench {
       val w = new java.io.PrintWriter(f)
       try {
         w.println(s"#run\t$runId")
-        // provenance convention, re-emitted on every write (readHistory
-        // skips '#'-prefixed lines): timings at seeded run ids come from
-        // an in-session dry run (tools/stamp_history.py stamps them so
-        // the driver's recorded pass targets stale names first) and are
-        // NOT driver-recorded certifications; a timing is recorded
-        // exactly when its run id postdates the seeding round's stamps.
-        w.println("# run ids <= 2: seeded stamps, timings from an " +
-          "in-session dry run (not certifications)")
-        w.println("# run ids >= 3: driver-recorded certifications from " +
-          "unfiltered Bench runs (warm min-of-2 per entry since run 6)")
+        // readHistory skips '#'-prefixed lines
+        w.println("# rows: name, sf1 seconds (warm min-of-2 of an " +
+          "unfiltered Bench run), run id of that run")
         w.println("# col 4 (when present): scaling cert = sf1 seconds / " +
           "same-run graded warm seconds; BenchSpec pins a ceiling on it")
         for ((n, c) <- hist.toSeq.sortBy(_._1))
@@ -439,8 +429,8 @@ object Bench {
     * slack to this inequality, which is exactly what skipped pass 2 on
     * a contended host. */
   def affordsWarmPass(elapsedS: Double, pass1S: Double,
-                      budgetS: Double, reserveS: Double): Boolean =
-    elapsedS + 0.85 * pass1S <= budgetS - reserveS
+                      budgetS: Double): Boolean =
+    elapsedS + 0.85 * pass1S <= budgetS - ReserveS
 
   /** File-backed twin of the stdout line: the driver's capture has
     * truncated the tail of long JSON lines before (round 4 lost the
@@ -463,26 +453,7 @@ object Bench {
     def elapsedS: Double = (System.nanoTime() - tStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.create("graft-bench")
-    // Self-imposed wall-clock budget for the WHOLE run. The driver wraps
-    // the bench in its own hard timeout (round 6 hit it: rc=124, no JSON
-    // at all); finishing under a conservative internal budget is what
-    // guarantees an rc=0 artifact with both maps. The reserve keeps the
-    // in-flight query + final serialization inside the budget (round 7
-    // overran: elapsed 1723 s > budget 1650 because the deadline was
-    // checked only between queries).
-    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1650")
-      .toDouble
-    val reserveS = sys.env.getOrElse("SPARK_GRAFT_BENCH_RESERVE_S", "60")
-      .toDouble
-    val deadlineNanos = tStart + ((budgetS - reserveS) * 1e9).toLong
-    // graded passes: best-of-N INTERLEAVED (all queries once, then again)
-    // so a bursty noisy-neighbor window can't hit every attempt of the
-    // same query. Default N=2: pass 2 restores a warm-comparable min
-    // (round 7's single cold pass made the headline jump 363→498 s on
-    // protocol alone).
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val gcRetryFrac = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC_RETRY",
-      "0.5").toDouble
+    val deadlineNanos = tStart + ((BudgetS - ReserveS) * 1e9).toLong
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => filter.forall(f => n.matches(f)))
@@ -492,13 +463,13 @@ object Bench {
     val gcfGraded = mutable.Map[String, Double]()
 
     // ---- untimed warm-up: JVM/classloader/codegen start-up belongs to no
-    // query's timed window (round 7: q01 "8.5 s" was simply first)
+    // query's timed window (otherwise q01, the first query, read 8.5 s)
     try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
     catch { case _: Throwable => () }
     // graded-dir one-time builds (bucketed fact tables, persisted
-    // indexes/codebooks) run untimed too: in a single-pass run the build
-    // otherwise lands inside pass 1's timing (round 10 recorded q52 at
-    // 5.8 s cold vs 0.9 s warm — the bucket WRITE, not the join)
+    // indexes/codebooks) run untimed too: otherwise the build lands
+    // inside pass 1's timing (q52 read 5.8 s cold vs 0.9 s warm — the
+    // bucket WRITE, not the join)
     val warm = names.filter(SparkEntry.specs(_).warmIndex)
     for (w <- warm)
       try SparkEntry.queries(w)(spark, sfDir).count()
@@ -506,15 +477,14 @@ object Bench {
 
     // ---- graded section. Pass 1 is sacred: no deadline — if even one
     // pass can't finish, there is no useful artifact to protect.
-    runSuite(spark, sfDir, names, SparkEntry.queries, 1, times, errors,
-      verbose = verbose, label = "graded pass 1", gcf = gcfGraded,
-      gcRetryFrac = gcRetryFrac)
+    runSuite(spark, sfDir, names, SparkEntry.queries, times, errors,
+      verbose = verbose, label = "graded pass 1", gcf = gcfGraded)
     val pass1S = elapsedS
     var gradedPasses = 1
     def gradedLine(extra: String): String = {
       val total = times.values.sum
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"""" +
-        s""","budget_s":$budgetS,"elapsed_s":$elapsedS""" +
+        s""","budget_s":$BudgetS,"elapsed_s":$elapsedS""" +
         s""","graded_passes":$gradedPasses""" +
         (if (errors.nonEmpty) s""","errors":${emap(errors)}""" else "") +
         (if (gcfGraded.exists(_._2 > 0.25))
@@ -523,111 +493,30 @@ object Bench {
     }
     writeTwin(gradedLine(s""","partial":true"""), filter.nonEmpty)
 
-    val largeDir = sys.env.getOrElse("SPARK_GRAFT_SF_LARGE_DIR",
-      new java.io.File(".bench/sf1").getAbsolutePath)
-    val largeRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_LARGE_RUNS", "1")
-      .toInt
-    val haveLarge = largeRuns >= 1 &&
-      new java.io.File(s"$largeDir/lineitem.parquet").exists()
-    val largeFactor = sys.env.getOrElse("SPARK_GRAFT_BENCH_LARGE_FACTOR",
-      "2.5").toDouble
-    // the graded min-of-2 is the judge's cross-round perf gate: pass 2
-    // runs IMMEDIATELY after pass 1 whenever the budget affords a warm
-    // pass, and the large rotation takes what remains (see
-    // affordsWarmPass for the round-10 failure this prevents).
-    def runGradedPass(): Unit = {
-      runSuite(spark, sfDir, names, SparkEntry.queries, 1, times, errors,
-        deadlineNanos, verbose, s"graded pass ${gradedPasses + 1}",
-        gcfGraded, n => times.getOrElse(n, 0.0), gcRetryFrac)
-      gradedPasses += 1
+    // graded pass 2 (the warm min-of-2) runs IMMEDIATELY after pass 1
+    // whenever the budget affords it, and the sf1 pass takes what remains
+    // (see affordsWarmPass)
+    if (affordsWarmPass(elapsedS, pass1S, BudgetS)) {
+      runSuite(spark, sfDir, names, SparkEntry.queries, times, errors,
+        deadlineNanos, verbose, "graded pass 2", gcfGraded,
+        n => times.getOrElse(n, 0.0))
+      gradedPasses = 2
       writeTwin(gradedLine(s""","partial":true"""), filter.nonEmpty)
     }
-    while (gradedPasses < runs &&
-        affordsWarmPass(elapsedS, pass1S, budgetS, reserveS))
-      runGradedPass()
-
-    // ---- 10x-row scale probe: the same aggregation/join shapes over a
-    // 10x unionAll of the inputs, so regressions that sf0.1 hides (skew,
-    // spill, partial-agg breakdown) show up as a ratio far above ~10x.
-    // Deadline-guarded like every other section (~120 s projected).
-    val probe =
-      if (sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE", "1") == "0" ||
-          elapsedS + 120.0 > budgetS - reserveS) ""
-      else try {
-        import org.apache.spark.sql.functions._
-        def time(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        val li10 = Seq.fill(10)(li).reduce(_ unionAll _)
-        val tAgg = time {
-          li10.groupBy(col("l_returnflag"), col("l_linestatus"))
-            .agg(sum(col("l_quantity")), avg(col("l_extendedprice")),
-              count(lit(1))).count()
-        }
-        val o = spark.read.parquet(s"$sfDir/orders.parquet")
-        val tJoin = time {
-          li10.join(o.hint("merge"),
-              col("l_orderkey") === col("o_orderkey"))
-            .groupBy(col("o_orderpriority")).agg(count(lit(1))).count()
-        }
-        // same ts normalization as SparkHelpers.t: nanos-as-long or NTZ
-        val evRaw = spark.read.parquet(s"$sfDir/events.parquet")
-        val ev = evRaw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            evRaw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-          case org.apache.spark.sql.types.TimestampNTZType =>
-            evRaw.withColumn("ts",
-              col("ts").cast(org.apache.spark.sql.types.TimestampType))
-          case _ => evRaw
-        }
-        val ev10 = Seq.fill(10)(ev).reduce(_ unionAll _)
-        val tEvt = time {
-          ev10.groupBy(date_trunc("hour", col("ts")), col("event_type"))
-            .agg(count(lit(1))).count()
-        }
-        // bucketed vs shuffled at 10x rows: same SMJ body, partitioning
-        // from bucket layout instead of a per-query Exchange. The one-time
-        // bucketed write is NOT timed (amortized across every later join
-        // of the fact pair, the production trade bucketing makes).
-        val tJoinBkt = {
-          for ((nm, df, key) <- Seq(("li10_bkt", li10, "l_orderkey"),
-              ("o10_bkt", o, "o_orderkey"))) {
-            if (!spark.catalog.tableExists(nm)) {
-              // the in-memory catalog forgets tables across JVMs: clear
-              // any stale directory or saveAsTable throws
-              // LOCATION_ALREADY_EXISTS
-              val wh = new java.net.URI(
-                spark.conf.get("spark.sql.warehouse.dir")).getPath
-              val p = new org.apache.hadoop.fs.Path(wh, nm)
-              p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                .delete(p, true)
-              df.write.bucketBy(32, key).sortBy(key)
-                .mode("overwrite").saveAsTable(nm)
-            }
-          }
-          time {
-            spark.table("li10_bkt")
-              .join(spark.table("o10_bkt").hint("merge"),
-                col("l_orderkey") === col("o_orderkey"))
-              .groupBy(col("o_orderpriority")).agg(count(lit(1))).count()
-          }
-        }
-        s""","scale_probe_10x":{"lineitem_agg":$tAgg,"lineitem_join":$tJoin,"lineitem_join_bucketed":$tJoinBkt,"events_hourly":$tEvt}"""
-      } catch { case _: Throwable => "" } // never lose the main JSON line
 
     // ---- sf1-class pass over the ScaleUp output (default .bench/sf1, a
-    // 10x fact-scaled copy — see graft.ScaleUp). Least-recently-certified
-    // order (see largeOrder); per-query projected-cost gate against the
-    // deadline; GC-polluted runs retried. The warm-up below runs the
-    // one-time artifact builds (bucketed tables, persisted
-    // indexes/codebooks) untimed so the timed body of the incremental
-    // family measures its operating cost, which is exactly what min-of-2
-    // passes gave when the budget allowed two. The exact-audit ceilings
-    // run their documented bench tier (QuerySpec.tier: the graded body
-    // over a hash-sampled slice). An abort or
-    // projected-cost skip keeps every entry already recorded and reports
-    // large_complete=false plus the skipped names.
+    // 10x fact-scaled copy — see graft.ScaleUp); a large dir without
+    // lineitem.parquet skips it. Least-recently-certified order (see
+    // largeOrder); per-query projected-cost gate against the deadline;
+    // GC-polluted runs retried. The warm-up below runs the one-time
+    // artifact builds (bucketed tables, persisted indexes/codebooks)
+    // untimed so the timed body of the incremental family measures its
+    // operating cost. The exact-audit ceilings run their documented bench
+    // tier (QuerySpec.tier: the graded body over a hash-sampled slice).
+    // An abort or projected-cost skip keeps every entry already recorded
+    // and reports large_complete=false plus the skipped names.
+    val largeDir = sys.env.getOrElse("SPARK_GRAFT_SF_LARGE_DIR",
+      new java.io.File(".bench/sf1").getAbsolutePath)
     val lt = mutable.Map[String, Double]()
     val gcfLarge = mutable.Map[String, Double]()
     // only tiers genuinely applied (query recorded this pass): a skipped
@@ -635,10 +524,10 @@ object Bench {
     def tiersApplied: Seq[String] =
       names.filter(n => SparkEntry.specs(n).tier.nonEmpty && lt.contains(n))
     val large =
-      if (!haveLarge) ""
+      if (!new java.io.File(s"$largeDir/lineitem.parquet").exists()) ""
       else try {
         val (histRun, hist) = readHistory()
-        val largeEst = largeEstimate(hist, times.get, largeFactor) _
+        val largeEst = largeEstimate(hist, times.get) _
         val ordered = largeOrder(names, hist, largeEst)
         // untimed warm-up, deadline-aware: bucketed fact tables and the
         // persisted-index builders
@@ -649,20 +538,12 @@ object Bench {
             catch { case _: Throwable => () }
         val lerrors = mutable.Map[String, String]()
         val lq = names.map(n => n -> SparkEntry.specs(n).tierBody).toMap
-        // every RECORDED entry is a warm back-to-back min-of-2: these
-        // stamps steer future tier/notch decisions from the git-tracked
-        // history, and round 11 proved a single pass at the contended
-        // end of the budget stamps up to 4.9x inflation (q307: 54.4 s
-        // recorded vs 11.2 s isolated warm min-of-2). Fewer names
-        // certify per round; the rotation rolls the residue.
-        val largeMin = sys.env
-          .getOrElse("SPARK_GRAFT_BENCH_LARGE_MIN", "2").toInt
         // a stamp carries its scaling cert: sf1 seconds over the SAME
         // run's graded warm seconds (see Cert.ratio / scalingViolations).
         // Only when the graded map really is warm min-of-2: a cold
-        // single-pass denominator (up to ~6x inflated, round-10
-        // measurement) would UNDERSTATE the ratio and let a superlinear
-        // shape slip under the ceiling — no ratio beats a wrong one.
+        // single-pass denominator (up to ~6x inflated) would UNDERSTATE
+        // the ratio and let a superlinear shape slip under the ceiling —
+        // no ratio beats a wrong one.
         def stamped(runId: Int): Map[String, Cert] =
           hist ++ lt.map { case (n, s) =>
             n -> Cert(s, runId,
@@ -672,8 +553,8 @@ object Bench {
           }
         // checkpoint every 10 recorded entries: persist the history
         // stamps AND a partial twin, so an external kill mid-pass (the
-        // driver's hard timeout — round 6 lost 177 entries to one)
-        // cannot erase what this pass already certified
+        // driver's hard timeout) cannot erase what this pass already
+        // certified
         var recorded = 0
         val checkpointLarge: String => Unit = { _ =>
           recorded += 1
@@ -686,16 +567,12 @@ object Bench {
               filtered = false)
           }
         }
-        var complete = runSuite(spark, largeDir, ordered, lq, 1, lt,
-          lerrors, deadlineNanos, verbose, "large pass 1", gcfLarge,
-          largeEst, gcRetryFrac, checkpointLarge, largeMin)
-        if (complete && largeRuns >= 2)
-          complete = runSuite(spark, largeDir, ordered, lq, 1, lt,
-            lerrors, deadlineNanos, verbose, "large pass 2", gcfLarge,
-            largeEst, gcRetryFrac, checkpointLarge, largeMin)
+        val complete = runSuite(spark, largeDir, ordered, lq, lt,
+          lerrors, deadlineNanos, verbose, "large pass", gcfLarge,
+          largeEst, checkpointLarge, LargeMin)
         // certification history: entries recorded THIS run stamp the new
         // run id; skipped queries keep their old stamp (and sort first
-        // next round). Filtered probes never touch the history.
+        // next run). Filtered probes never touch the history.
         if (filter.isEmpty)
           writeHistory(histRun + 1, stamped(histRun + 1))
         val skipped = names.filter(n => !lt.contains(n))
@@ -706,7 +583,7 @@ object Bench {
             skipped.map(jstr).mkString(""","large_skipped":[""", ",", "]")
           else "") +
           (if (tiered.nonEmpty)
-            // {name: slice denominator} so round-over-round total_large
+            // {name: slice denominator} so run-over-run total_large
             // stays normalizable when a tier notches (e.g. 1/4 -> 1/8)
             tiered.map(n => s"${jstr(n)}:${tierSlice(n)}")
               .mkString(""","large_tiered":{""", ",", "}")
@@ -718,17 +595,10 @@ object Bench {
           s""","queries_large":${qmap(lt, names)}"""
       } catch { case _: Throwable => "" }
 
-    // ---- opportunistic: if the large pass left budget on the table and
-    // the graded map is still single-pass, spend the slack on pass 2 (the
-    // warm min the judge compares against)
-    while (gradedPasses < runs &&
-        affordsWarmPass(elapsedS, pass1S, budgetS, reserveS))
-      runGradedPass()
-
     // the graded `queries` map goes LAST: the driver captures the output
     // tail, and with the map first a truncated capture kept the
-    // large-suite numbers and lost the graded ones (rounds 4 and 5)
-    val line = gradedLine(probe + large)
+    // large-suite numbers and lost the graded ones
+    val line = gradedLine(large)
     println(line)
     writeTwin(line, filter.nonEmpty)
     // the <500-byte totals summary stays the LAST line
@@ -739,7 +609,7 @@ object Bench {
       if (large.isEmpty) None
       else Some((lt.values.sum, lt.size,
         names.count(n => !lt.contains(n)))),
-      budgetS, elapsedS, filtered = filter.nonEmpty,
+      BudgetS, elapsedS, filtered = filter.nonEmpty,
       tierApplied = tiersApplied))
     spark.stop()
   }

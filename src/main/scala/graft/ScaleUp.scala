@@ -17,10 +17,15 @@ import org.apache.spark.sql.functions._
   * cheat, for the candidate-generation paths.
   *
   * Run once: `sbt "runMain graft.ScaleUp"` (env SPARK_GRAFT_SCALEUP_SRC /
-  * _DEST / _FACTOR override the defaults). Bench auto-detects the output
-  * dir and appends a single-pass large section to its JSON line.
+  * _DEST override the source and output dirs). Bench auto-detects the
+  * output dir and appends its sf1-class section to its JSON line.
   */
 object ScaleUp {
+
+  /** Fact replicas the main writes: the scaling-certificate ceiling
+    * (`Bench.scalingViolations`) and `Bench.largeEstimate`'s 8x cap
+    * assume ~10x the graded fact rows. */
+  private val Factor = 10
 
   /** Write the scaled copy of `src` to `dest`. Pulled out of main so the
     * invariants (fact x factor, dims unscaled, per-replica key remap, FK
@@ -68,10 +73,9 @@ object ScaleUp {
       "/root/testdata/sf0.1")
     val dest = sys.env.getOrElse("SPARK_GRAFT_SCALEUP_DEST",
       "/root/repo/.bench/sf1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALEUP_FACTOR", "10").toInt
     val spark = GraftSession.create("graft-scaleup")
-    run(spark, src, dest, factor)
-    println(s"""{"scaleup":"$dest","factor":$factor,"src":"$src"}""")
+    run(spark, src, dest, Factor)
+    println(s"""{"scaleup":"$dest","factor":$Factor,"src":"$src"}""")
     spark.stop()
   }
 }
